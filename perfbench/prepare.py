@@ -1,6 +1,9 @@
 """Prepared inputs, generated once per checkout and cached under
-``.perfbench/inputs-<key>``; the key hashes the engine's and the
-benchmark's sources with the corpus parameters (see ``common.source_hash``).
+``.perfbench/inputs-<key>``; the key hashes the engine's sources and this
+module with the corpus parameters (see ``common.source_hash``).
+
+``python3 perfbench/prepare.py`` builds them in a Spark session of its own,
+so a measured run never starts in a JVM that preparation warmed up.
 
 Contents:
   spans/               span table of the corpus every workload starts from
@@ -19,10 +22,11 @@ from __future__ import annotations
 
 import json
 import shutil
+import sys
 
 import numpy as np
 
-from common import WORK_DIR, log, source_hash
+from common import ROOT, WORK_DIR, log, reset_dir, source_hash, start_spark, stop_spark
 
 CORPUS_SEED = 77
 CORPUS_DOCS = 1000    # ~14k spans
@@ -94,6 +98,11 @@ def _expected_spans(n_docs: int, seed: int) -> int:
     return int(gen_documents_local(n_docs, seed=seed)["spans"].map(len).sum())
 
 
+def load_meta() -> dict | None:
+    path = inputs_dir() / "meta.json"
+    return json.loads(path.read_text()) if path.exists() else None
+
+
 def ensure_inputs(spark) -> dict:
     """Build every workload's prepared input once; returns meta.json."""
     from raptor_service_spark.functions.vector import embed_spans, hash_embed_np
@@ -108,8 +117,9 @@ def ensure_inputs(spark) -> dict:
     )
 
     final = inputs_dir()
-    if (final / "meta.json").exists():
-        return json.loads((final / "meta.json").read_text())
+    meta = load_meta()
+    if meta is not None:
+        return meta
     # catalogs record absolute file paths, so inputs are built in place;
     # meta.json, written last, marks them complete
     for old in WORK_DIR.glob("inputs-*"):
@@ -164,3 +174,14 @@ def ensure_inputs(spark) -> dict:
 
     (out / "meta.json").write_text(json.dumps(meta))
     return meta
+
+
+if __name__ == "__main__":
+    sys.path.insert(0, str(ROOT))
+    scratch = reset_dir(WORK_DIR / "prepare")
+    session = start_spark(scratch)
+    try:
+        ensure_inputs(session)
+    finally:
+        stop_spark(session)
+        shutil.rmtree(scratch)

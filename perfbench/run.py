@@ -19,12 +19,14 @@ import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
 import time
 
 sys.dont_write_bytecode = True
 
 from common import (
+    BENCH_DIR,
     PKG_DIR,
     ROOT,
     WORK_DIR,
@@ -92,7 +94,7 @@ def main(argv=None) -> int:
         return 2
     sys.path.insert(0, str(ROOT))
 
-    from prepare import ensure_inputs, inputs_dir
+    from prepare import inputs_dir, load_meta
     from tracing import (
         FailureWatch,
         Tracer,
@@ -102,6 +104,10 @@ def main(argv=None) -> int:
     )
     from workloads import WORKLOADS, ClosedLoop
 
+    if load_meta() is None:  # once per checkout, in a JVM of its own
+        subprocess.run([sys.executable, "-B", str(BENCH_DIR / "prepare.py")],
+                       stdout=sys.stderr, check=True)
+    meta = load_meta()
     run_dir = reset_dir(WORK_DIR / "run")
     os.sync()  # start with no write-back from an earlier run still pending
     event_log = run_dir / "eventlog" if args.trace else None
@@ -112,7 +118,6 @@ def main(argv=None) -> int:
     session_s = time.perf_counter() - t0
     sampler = RssSampler(jvm_process(spark).pid)
     try:
-        meta = ensure_inputs(spark)  # once per checkout; not part of setup_s
         wl = WORKLOADS[args.workload](spark, meta, args.seed, run_dir, inputs_dir())
         loads = []
         for _ in range(SETUP_REPEATS):
