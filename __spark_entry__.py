@@ -32,7 +32,6 @@ from raptor_service_spark.functions.text import (
     fingerprint,
     lang_id,
     lang_id_sql,
-    normalize_query_sql,
     quality_score,
     quality_score_sql,
 )
@@ -85,41 +84,9 @@ def _latlng_sql(doc_expr: str) -> tuple[str, str]:
     return lat, lng
 
 
-def _two_phase_row_number(df, bucket_col, order_cols, out="rn"):
-    """Global ROW_NUMBER without a single-partition window (the seq_packing
-    two-phase prefix-sum discipline, reusable): rows are bucketed by
-    ``bucket_col`` — which MUST be a monotone non-decreasing function of the
-    global ordering, with ties of the ordering inside one bucket — then
-    rank = within-bucket row_number (partitioned window, parallel) + the
-    bucket's offset (cumulative counts over the O(buckets) aggregate,
-    broadcast back).  The only partition-less window left runs over the
-    bucket-count aggregate, bounded by bucket cardinality, never O(rows)."""
-    from pyspark.sql import Window
-
-    b = df.withColumn("_tp_b", bucket_col)
-    cnts = b.groupBy("_tp_b").agg(F.count(F.lit(1)).alias("_tp_c"))
-    wb = Window.orderBy("_tp_b").rowsBetween(Window.unboundedPreceding, -1)
-    off = cnts.withColumn(
-        "_tp_o", F.coalesce(F.sum("_tp_c").over(wb), F.lit(0))
-    ).select("_tp_b", "_tp_o")
-    wi = Window.partitionBy("_tp_b").orderBy(*order_cols)
-    return (
-        b.withColumn("_tp_r", F.row_number().over(wi))
-        .join(F.broadcast(off), "_tp_b")
-        .withColumn(out, (F.col("_tp_r") + F.col("_tp_o")).cast("long"))
-        .drop("_tp_b", "_tp_r", "_tp_o")
-    )
-
-
 QVEC = np.round(gen_query_vectors(seed=99, n=1, dim=64)[0], 6)
 QVEC_SQL = "[" + ", ".join(f"{x:.6f}" for x in QVEC) + "]"
 
-
-def _round_half_up(x, dp: int):
-    """DuckDB/Spark ROUND semantics (half away from zero) for numpy —
-    np.round is half-to-even and diverges on exact .5 scaled values."""
-    p = 10.0**dp
-    return np.copysign(np.floor(np.abs(np.asarray(x, dtype=np.float64)) * p + 0.5), x) / p
 
 TRI = [(10.0, 20.0), (40.0, 60.0), (-20.0, 70.0)]  # (lat, lng)
 RECT = [(-30.0, -120.0), (-30.0, -60.0), (10.0, -60.0), (10.0, -120.0)]
@@ -526,26 +493,6 @@ def q_top2_orders_per_customer(spark, sf_dir):
     )
 
 
-def q_events_hourly_stats(spark, sf_dir):
-    """Streaming-unified windowed agg, batch mode (streaming/events.py)."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-            "n_users",
-        )
-    )
-
-
 def q_json_props(spark, sf_dir):
     """F10 JSON parse + agg (utils/json.py analog)."""
     ev = _read(spark, sf_dir, "events")
@@ -553,71 +500,6 @@ def q_json_props(spark, sf_dir):
         ev.withColumn("k", F.get_json_object("props", "$.k").cast("long"))
         .groupBy("event_type")
         .agg(F.round(F.avg("k"), 6).alias("avg_k"), F.sum("k").alias("sum_k"))
-    )
-
-
-def q_user_sessions(spark, sf_dir):
-    """Gap-based sessionization, batch form (streaming/sessions.py — the
-    applyInPandasWithState streaming twin is parity-tested in
-    tests/test_sessions.py): lag -> gap flag -> cumsum session id -> agg."""
-    from raptor_service_spark.streaming.sessions import sessionize_batch
-
-    ev = _read(spark, sf_dir, "events").filter(F.col("user_id") < 100)
-    return sessionize_batch(ev, gap_minutes=30).select(
-        "user_id",
-        F.col("sess_id").cast("long").alias("sess_id"),
-        F.date_format(F.col("session_start").cast("timestamp"), "yyyy-MM-dd HH:mm:ss").alias("start_dt"),
-        F.date_format(F.col("session_end").cast("timestamp"), "yyyy-MM-dd HH:mm:ss").alias("end_dt"),
-        "n_events",
-        "sum_value",
-    )
-
-
-def q_filtered_revenue(spark, sf_dir):
-    """TPC-H Q6 shape: pure scan-filter-agg — every predicate and both
-    columns must reach the parquet reader (PushedFilters/ReadSchema), the
-    agg is one partial+final combine, zero joins, zero Python."""
-    l = _read(spark, sf_dir, "lineitem")
-    return (
-        l.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
-def q_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 shape: selective dim filter -> two fact joins -> agg ->
-    global top-10 (TakeOrderedAndProject after partial/final agg)."""
-    c = _read(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "AUTOMOBILE")
-    o = _read(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    l = _read(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
-    )
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(l, o.o_orderkey == l.l_orderkey)
-        .groupBy(
-            "l_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
-        )
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(10)
     )
 
 
@@ -668,34 +550,6 @@ def q_first_seen_dedup(spark, sf_dir):
     )
 
 
-def q_revenue_by_nation(spark, sf_dir):
-    """TPC-H Q5 shape with explicit broadcast of the dimension chain
-    (region -> nation): the small sides never shuffle the fact table; at
-    100 TB the only shuffles left are the two fact equi-joins + final agg."""
-    r = _read(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _read(spark, sf_dir, "nation")
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    l = _read(spark, sf_dir, "lineitem")
-    dim = F.broadcast(
-        n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).select(
-            "n_nationkey", "n_name"
-        )
-    )
-    return (
-        c.join(dim, c.c_nationkey == F.col("n_nationkey"))
-        .join(o, c.c_custkey == o.o_custkey)
-        .join(l, o.o_orderkey == l.l_orderkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            ),
-            F.count("*").alias("n_items"),
-        )
-    )
-
-
 def q_price_bucket_range_join(spark, sf_dir):
     """J11 range/interval join: orders banded against a tiny bucket table on
     o_totalprice BETWEEN lo AND hi — broadcast nested-loop on the literal
@@ -729,87 +583,6 @@ def q_scalar_funcs(spark, sf_dir):
         F.format_string("%d::leaf::%06d", F.col("doc_id"), F.col("doc_id") % 1000).alias("leaf_id"),
         F.substring(F.col("text"), 1, 40).alias("truncated"),
         F.length(F.col("text")).cast("long").alias("n_chars"),
-    )
-
-
-def q_doc_winnow_fp(spark, sf_dir):
-    """Rolling-hash document fingerprinting (winnowing, the MOSS scheme):
-    per-doc distinct window-min gram hashes, aggregated to (n_fp, fp_min,
-    fp_sum) so the compare stays small. operators/dedup.winnow_fingerprints."""
-    from raptor_service_spark.operators.dedup import winnow_fingerprints
-
-    d = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    fp = winnow_fingerprints(d)
-    return fp.groupBy(F.col("id").alias("doc_id")).agg(
-        F.count("*").alias("n_fp"),
-        F.min("fp").alias("fp_min"),
-        F.sum("fp").alias("fp_sum"),
-    )
-
-
-def _doc_winnow_fp_sql() -> str:
-    from raptor_service_spark.operators.dedup import winnow_fingerprints_sql
-
-    inner = winnow_fingerprints_sql("(SELECT * FROM documents WHERE doc_id < 300) s")
-    return f"""
-        SELECT id AS doc_id, COUNT(*) AS n_fp, MIN(fp) AS fp_min,
-               CAST(SUM(fp) AS BIGINT) AS fp_sum
-        FROM ({inner}) GROUP BY 1
-    """
-
-
-def q_doc_token_stats(spark, sf_dir):
-    """Both token counters from the brief — whitespace and BPE-ish regex —
-    per language."""
-    from raptor_service_spark.functions.text import token_count, token_count_bpe
-
-    d = _read(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
-        F.sum(token_count(F.col("text")).cast("long")).alias("ws_tokens"),
-        F.sum(token_count_bpe(F.col("text")).cast("long")).alias("bpe_tokens"),
-        F.count("*").alias("n_docs"),
-    )
-
-
-def _doc_token_stats_sql() -> str:
-    from raptor_service_spark.functions.text import token_count_bpe_sql, token_count_sql
-
-    return f"""
-        SELECT lang,
-               CAST(SUM({token_count_sql('text')}) AS BIGINT) AS ws_tokens,
-               CAST(SUM({token_count_bpe_sql('text')}) AS BIGINT) AS bpe_tokens,
-               COUNT(*) AS n_docs
-        FROM documents GROUP BY 1
-    """
-
-
-def q_events_quantiles(spark, sf_dir):
-    """Exact per-group quantiles (continuous interpolation — matches DuckDB
-    quantile_cont bit-for-bit at 6 dp). Exact percentile buffers each
-    group's values; at 100 TB swap to approx_percentile (t-digest sketch,
-    mergeable partial agg) — the exact form is kept here because it is
-    oracle-checkable."""
-    ev = _read(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
-        F.count("*").alias("n_events"),
-    )
-
-
-def q_query_normalize(spark, sf_dir):
-    """Query length policy battery (query_rewrite_service.py:48-67): caps
-    scaled to the driver docs' token range so all three branches fire —
-    pass-through, truncate-to-target, reject(NULL)."""
-    from raptor_service_spark.functions.text import normalize_query, token_count
-
-    d = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    nq = normalize_query(F.col("text"), soft_cap=50, hard_cap=90, target_tokens=30)
-    return d.select(
-        "doc_id",
-        token_count(F.col("text")).cast("long").alias("n_tokens"),
-        F.length(nq).cast("long").alias("norm_len"),
-        F.coalesce(F.substring(nq, 1, 24), F.lit("<rejected>")).alias("norm_head"),
     )
 
 
@@ -871,27 +644,6 @@ def q_doc_hash_split(spark, sf_dir):
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(token_count(F.col("text")).cast("long")).alias("n_tokens"),
         )
-    )
-
-
-def q_top_terms_per_lang(spark, sf_dir):
-    """Per-language top-5 terms by frequency (explode -> two-phase count ->
-    per-group window top-k) — corpus summarization for dataset cards."""
-    d = _read(spark, sf_dir, "documents")
-    w = F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term")
-    counts = (
-        d.select("lang", w)
-        .filter(F.col("term") != "")
-        .groupBy("lang", "term")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    from pyspark.sql import Window
-
-    win = Window.partitionBy("lang").orderBy(F.col("n").desc(), F.col("term").asc())
-    return (
-        counts.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= 5)
-        .select("lang", "term", "n", F.col("rk").cast("long").alias("rk"))
     )
 
 
@@ -1367,232 +1119,6 @@ def _pip_donut_sql() -> str:
     )
 
 
-_RADIUS_CENTERS = {"c1": (30.0, -80.0), "c2": (-20.0, 140.0), "c3": (50.0, 10.0)}
-_RADIUS = 25.0
-
-
-def q_radius_join_docs(spark, sf_dir):
-    """Within-radius distance join (filter-refine, interior-cell fast
-    accept, codegen sqrt refine — operators/pip_join.radius_join) of driver
-    docs against three literal centers."""
-    from raptor_service_spark.operators.pip_join import radius_join
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    return radius_join(pts, _RADIUS_CENTERS, _RADIUS, res=5).select(
-        "qid", "doc_id", "dist"
-    )
-
-
-def _radius_join_docs_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    vals = ", ".join(
-        f"('{q}', {la}, {ln})" for q, (la, ln) in _RADIUS_CENTERS.items()
-    )
-    d = f"sqrt(({lat} - clat) * ({lat} - clat) + ({lng} - clng) * ({lng} - clng))"
-    return f"""
-        SELECT qid, doc_id, ROUND({d}, 6) AS dist
-        FROM documents CROSS JOIN (VALUES {vals}) q(qid, clat, clng)
-        WHERE ROUND({d}, 6) <= {_RADIUS}
-    """
-
-
-_GEOKNN_QUERIES = {"g1": (48.8, 2.3), "g2": (-33.8, 151.2), "g3": (40.7, -74.0)}
-
-
-def q_geo_knn_docs(spark, sf_dir):
-    """Spatial kNN join (operators/geo_knn.py): exact 5 nearest driver docs
-    per literal query point, candidates pruned to occupancy-planned k-rings,
-    refine is codegen sqrt + per-qid window top-k."""
-    from raptor_service_spark.operators.geo_knn import geo_knn_join
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    return geo_knn_join(
-        pts, _GEOKNN_QUERIES, k=5, res=6, payload_cols=("doc_id",)
-    )
-
-
-def _geo_knn_docs_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    vals = ", ".join(
-        f"('{q}', {la}, {ln})" for q, (la, ln) in _GEOKNN_QUERIES.items()
-    )
-    d = f"sqrt(({lat} - clat) * ({lat} - clat) + ({lng} - clng) * ({lng} - clng))"
-    return f"""
-        SELECT qid, doc_id, ROUND({d}, 6) AS dist
-        FROM documents CROSS JOIN (VALUES {vals}) q(qid, clat, clng)
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY qid
-                                   ORDER BY ROUND({d}, 6), doc_id) <= 5
-    """
-
-
-def _doc_boxes(spark, sf_dir) -> DataFrame:
-    """Deterministic per-doc boxes: center at the doc's geo anchor, half
-    sizes 1..5 deg lat / 1..7 deg lng from the id (same arithmetic in SQL)."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    hlat = (F.pmod(F.col("doc_id"), F.lit(5)) + F.lit(1)).cast("double")
-    hlng = (F.pmod(F.floor(F.col("doc_id") / F.lit(5)), F.lit(7)) + F.lit(1)).cast(
-        "double"
-    )
-    return d.select(
-        "doc_id",
-        (lat - hlat).alias("lat_lo"),
-        (lat + hlat).alias("lat_hi"),
-        (lng - hlng).alias("lng_lo"),
-        (lng + hlng).alias("lng_hi"),
-    )
-
-
-def q_bbox_overlap_docs(spark, sf_dir):
-    """Rectangle spatial self-join (operators/bbox_join.py): overlapping
-    doc-box pairs via grid cover-cell equi-join; duplicates suppressed at
-    the canonical intersection-corner cell (no distinct shuffle)."""
-    from raptor_service_spark.operators.bbox_join import bbox_self_join
-
-    return bbox_self_join(_doc_boxes(spark, sf_dir), res=5, id_col="doc_id")
-
-
-def _bbox_overlap_docs_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    return f"""
-        WITH b AS (
-            SELECT doc_id,
-                   {lat} - h1 AS lat_lo, {lat} + h1 AS lat_hi,
-                   {lng} - h2 AS lng_lo, {lng} + h2 AS lng_hi
-            FROM (SELECT doc_id,
-                         CAST(doc_id % 5 + 1 AS DOUBLE) AS h1,
-                         CAST(CAST(FLOOR(doc_id / 5) AS BIGINT) % 7 + 1
-                              AS DOUBLE) AS h2
-                  FROM documents))
-        SELECT a.doc_id AS id_a, c.doc_id AS id_b
-        FROM b a JOIN b c
-          ON a.doc_id < c.doc_id
-         AND a.lat_lo <= c.lat_hi AND c.lat_lo <= a.lat_hi
-         AND a.lng_lo <= c.lng_hi AND c.lng_lo <= a.lng_hi
-    """
-
-
-def q_compact_cover(spark, sf_dir):
-    """Minimal multi-res cover of the occupied res-4 doc cells
-    (operators/compact_cells.py — H3 `compact` analog): complete sibling
-    quads promoted to parents down to res 1; each ladder step is one agg +
-    one anti-join on the occupied-cell set."""
-    from raptor_service_spark.operators.compact_cells import compact_cells
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    cells = d.select(cell_encode_col(lat, lng, 4).alias("cell"))
-    return compact_cells(cells, res=4, min_res=1)
-
-
-def _compact_cover_sql() -> str:
-    from raptor_service_spark.operators.compact_cells import compact_cells_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    base = f"SELECT {cell_encode_sql(lat, lng, 4)} AS cell FROM documents"
-    return compact_cells_sql(base, res=4, min_res=1)
-
-
-def q_cover_uncompact_roundtrip(spark, sf_dir):
-    """compact → uncompact == identity (operators/compact_cells.py): the
-    compacted multi-res cover of the occupied res-4 cells, expanded back to
-    res 4 with the closed-form block expansion. The oracle is simply the
-    DISTINCT res-4 cell set — a strong semantic check of both directions."""
-    from raptor_service_spark.operators.compact_cells import (
-        compact_cells,
-        uncompact_cells_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    cells = d.select(cell_encode_col(lat, lng, 4).alias("cell"))
-    cover = compact_cells(cells, res=4, min_res=1)
-    return cover.select(
-        F.explode(uncompact_cells_col("cell", 4)).alias("cell")
-    )
-
-
-def _cover_uncompact_roundtrip_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    cell4 = cell_encode_sql(lat, lng, 4)
-    return f"SELECT DISTINCT {cell4} AS cell FROM documents"
-
-
-_EPS_DEG = 8.0
-
-
-def q_doc_pairs_within(spark, sf_dir):
-    """ε-distance self-join (operators/pip_join.within_distance_join): doc
-    pairs within 8° (the driver corpus is ~6° sparse, so this is
-    non-vacuous); 3x3 neighbor-cell equi-join at the auto-picked res finds
-    each pair exactly once (no dedup shuffle)."""
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    out = within_distance_join(pts, pts, eps=_EPS_DEG)
-    return (
-        out.filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(
-            F.col("l.doc_id").alias("id_a"),
-            F.col("r.doc_id").alias("id_b"),
-            "dist",
-        )
-    )
-
-
-def _doc_pairs_within_sql() -> str:
-    lat_a, lng_a = _latlng_sql("a.doc_id")
-    lat_b, lng_b = _latlng_sql("b.doc_id")
-    d = (
-        f"sqrt(({lat_a} - {lat_b}) * ({lat_a} - {lat_b}) + "
-        f"({lng_a} - {lng_b}) * ({lng_a} - {lng_b}))"
-    )
-    return f"""
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, ROUND({d}, 6) AS dist
-        FROM documents a JOIN documents b ON a.doc_id < b.doc_id
-        WHERE ROUND({d}, 6) <= {_EPS_DEG}
-    """
-
-
-def q_pip_zonal_stats(spark, sf_dir):
-    """Zonal statistics: per query polygon, count + token stats of the docs
-    inside (PIP join → one partial+final agg)."""
-    from raptor_service_spark.functions.text import token_count
-    from raptor_service_spark.operators.pip_join import point_in_polygon_join
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    polys = {"tri": np.array(TRI), "rect": np.array(RECT)}
-    hits = point_in_polygon_join(pts, polys, res=6)
-    return hits.groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count(F.col("text")).cast("long")).alias("total_tokens"),
-        F.min("doc_id").alias("min_doc"),
-    )
-
-
-def _pip_zonal_stats_sql() -> str:
-    from raptor_service_spark.functions.text import token_count_sql
-
-    tri_sql = _convex_pip_sql("tri", TRI)
-    rect_sql = _convex_pip_sql("rect", RECT)
-    return f"""
-        SELECT qid, COUNT(*) AS n_docs,
-               CAST(SUM({token_count_sql("d.text")}) AS BIGINT) AS total_tokens,
-               MIN(doc_id) AS min_doc
-        FROM ({tri_sql} UNION ALL {rect_sql}) h
-        JOIN documents d USING (doc_id)
-        GROUP BY 1
-    """
-
-
 _BM25_TERMS = ["vector", "merge", "stream"]
 _RRF_K = 60
 
@@ -1691,680 +1217,6 @@ def _hybrid_retrieval_sql() -> str:
     """
 
 
-def q_user_travel(spark, sf_dir):
-    """Trajectory length per user: events ordered by (ts, event_id), each
-    event anchored via the hash geo anchor of its event_id, consecutive-leg
-    haversine summed — one window shuffle + one agg."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.distance import haversine_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng).filter(
-        F.col("user_id") < 50
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    leg = haversine_col(
-        F.lag("lat").over(w), F.lag("lng").over(w), F.col("lat"), F.col("lng")
-    )
-    return (
-        pts.withColumn("leg_km", leg)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("leg_km"), 6).alias("travel_km"),
-        )
-    )
-
-
-def _user_travel_sql() -> str:
-    from raptor_service_spark.geo.distance import haversine_sql
-
-    lat, lng = _latlng_sql("event_id")
-    d = haversine_sql("plat", "plng", "lat", "lng")
-    return f"""
-        WITH p AS (
-            SELECT user_id, {lat} AS lat, {lng} AS lng,
-                   LAG({lat}) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS plat,
-                   LAG({lng}) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS plng
-            FROM events WHERE user_id < 50)
-        SELECT user_id, COUNT(*) AS n_events,
-               ROUND(SUM({d}), 6) AS travel_km
-        FROM p GROUP BY 1
-    """
-
-
-def q_geo_clusters(spark, sf_dir):
-    """DBSCAN-style spatial clustering (ε-graph connected components):
-    pairs from within_distance_join (each pair found once, no dedup pass)
-    → min-label propagation (operators/dedup.dedup_components, one shuffle
-    per round) → per-doc cluster label + cluster size. The geo twin of the
-    near-dup component labeling."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.dedup import dedup_components
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    pairs = (
-        within_distance_join(pts, pts, eps=_EPS_DEG)
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-    )
-    comp = dedup_components(pairs)
-    out = d.join(comp, d["doc_id"] == comp["id"], "left").select(
-        "doc_id", F.coalesce("comp", "doc_id").alias("cluster")
-    )
-    return out.withColumn(
-        "cluster_size", F.count(F.lit(1)).over(Window.partitionBy("cluster"))
-    )
-
-
-def _geo_clusters_sql() -> str:
-    pairs = f"SELECT id_a AS doc_a, id_b AS doc_b FROM ({_doc_pairs_within_sql()})"
-    return f"""
-        WITH RECURSIVE pr AS ({pairs}),
-        edges AS (
-            SELECT doc_a AS src, doc_b AS dst FROM pr
-            UNION SELECT doc_b, doc_a FROM pr
-        ),
-        reach(id, r) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id
-        ),
-        comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY id),
-        sel AS (SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS cluster
-                FROM documents d LEFT JOIN comp c ON d.doc_id = c.id)
-        SELECT doc_id, cluster,
-               COUNT(*) OVER (PARTITION BY cluster) AS cluster_size
-        FROM sel
-    """
-
-
-_DBSCAN_EPS, _DBSCAN_MINPTS = 12.0, 4
-
-
-def q_geo_dbscan(spark, sf_dir):
-    """Full DBSCAN semantics (extends q_geo_clusters' minPts=1 case): core
-    points have ≥ minPts neighbors within ε (self included), clusters are
-    components of the core-core ε-graph, border points adopt the smallest
-    cluster label among their core neighbors, the rest is noise. All inputs
-    come from ONE ε-join pass (within_distance_join — each ordered pair
-    found exactly once); labeling is the O(edges) min-label loop."""
-    from raptor_service_spark.operators.dedup import dedup_components
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    pairs = within_distance_join(pts, pts, eps=_DBSCAN_EPS).select(
-        F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b")
-    )
-    # neighbor counts INCLUDE the self-pair the ε-join emits at dist 0
-    core = (
-        pairs.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= _DBSCAN_MINPTS)
-        .select(F.col("a").alias("id"))
-    )
-    core_edges = (
-        pairs.filter(F.col("a") < F.col("b"))
-        .join(core.select(F.col("id").alias("a")), "a")
-        .join(core.select(F.col("id").alias("b")), "b")
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-    )
-    comp = dedup_components(core_edges)
-    core_lab = core.join(comp, "id", "left").select(
-        "id", F.coalesce("comp", "id").alias("cluster")
-    )
-    border_lab = (
-        pairs.join(core_lab.withColumnRenamed("id", "b"), "b")
-        .join(core.withColumnRenamed("id", "a"), "a", "left_anti")
-        .groupBy("a")
-        .agg(F.min("cluster").alias("cluster"))
-    )
-    out = (
-        d.join(core_lab.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .withColumnRenamed("cluster", "core_cluster")
-        .join(border_lab.withColumnRenamed("a", "doc_id"), "doc_id", "left")
-    )
-    return out.select(
-        "doc_id",
-        F.when(F.col("core_cluster").isNotNull(), F.lit("core"))
-        .when(F.col("cluster").isNotNull(), F.lit("border"))
-        .otherwise(F.lit("noise"))
-        .alias("role"),
-        F.coalesce("core_cluster", "cluster").alias("cluster"),
-    )
-
-
-def _geo_dbscan_sql() -> str:
-    lat_a, lng_a = _latlng_sql("a.doc_id")
-    lat_b, lng_b = _latlng_sql("b.doc_id")
-    dd = (
-        f"sqrt(({lat_a} - {lat_b}) * ({lat_a} - {lat_b}) + "
-        f"({lng_a} - {lng_b}) * ({lng_a} - {lng_b}))"
-    )
-    return f"""
-        WITH RECURSIVE pr AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM documents a JOIN documents b ON a.doc_id < b.doc_id
-            WHERE ROUND({dd}, 6) <= {_DBSCAN_EPS!r}),
-        sym AS (SELECT id_a AS a, id_b AS b FROM pr
-                UNION ALL SELECT id_b, id_a FROM pr),
-        cnt AS (SELECT d.doc_id, 1 + COUNT(s.b) AS n
-                FROM documents d LEFT JOIN sym s ON s.a = d.doc_id
-                GROUP BY 1),
-        core AS (SELECT doc_id FROM cnt WHERE n >= {_DBSCAN_MINPTS}),
-        ce AS (SELECT a, b FROM sym
-               WHERE a IN (SELECT doc_id FROM core)
-                 AND b IN (SELECT doc_id FROM core)),
-        reach(id, r) AS (
-            SELECT a, a FROM ce
-            UNION
-            SELECT e.a, reach.r FROM ce e JOIN reach ON e.b = reach.id),
-        comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY id),
-        core_lab AS (SELECT c.doc_id AS id, COALESCE(m.comp, c.doc_id) AS cluster
-                     FROM core c LEFT JOIN comp m ON m.id = c.doc_id),
-        border_lab AS (
-            SELECT s.a AS id, MIN(cl.cluster) AS cluster
-            FROM sym s JOIN core_lab cl ON s.b = cl.id
-            WHERE s.a NOT IN (SELECT doc_id FROM core)
-            GROUP BY 1)
-        SELECT d.doc_id,
-               CASE WHEN c.cluster IS NOT NULL THEN 'core'
-                    WHEN b.cluster IS NOT NULL THEN 'border'
-                    ELSE 'noise' END AS role,
-               COALESCE(c.cluster, b.cluster) AS cluster
-        FROM documents d
-        LEFT JOIN core_lab c ON c.id = d.doc_id
-        LEFT JOIN border_lab b ON b.id = d.doc_id
-    """
-
-
-def q_geofence_transitions(spark, sf_dir):
-    """Geofence enter/exit detection: per-user event stream, membership in
-    the TRI fence as the codegen convex cross-product boolean (the same
-    generated string runs in the oracle), transitions via lag over the
-    (ts, event_id) order — one window shuffle."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = (
-        ev.filter(F.col("user_id") < 30)
-        .withColumn("lat", lat)
-        .withColumn("lng", lng)
-        .withColumn("inside", F.expr(_convex_inside_expr(TRI, "lat", "lng")))
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    out = pts.withColumn("prev", F.lag("inside").over(w)).filter(
-        F.col("prev").isNotNull() & (F.col("prev") != F.col("inside"))
-    )
-    return out.select(
-        "user_id",
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("at"),
-        F.when(F.col("inside"), F.lit("enter")).otherwise(F.lit("exit")).alias(
-            "direction"
-        ),
-    )
-
-
-def _geofence_transitions_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    inside = _convex_inside_expr(TRI, lat, lng)
-    return f"""
-        WITH m AS (
-            SELECT user_id, event_id, ts, {inside} AS inside,
-                   LAG({inside}) OVER (PARTITION BY user_id
-                                       ORDER BY ts, event_id) AS prev
-            FROM events WHERE user_id < 30)
-        SELECT user_id, event_id,
-               strftime(ts, '%Y-%m-%d %H:%M:%S') AS at,
-               CASE WHEN inside THEN 'enter' ELSE 'exit' END AS direction
-        FROM m WHERE prev IS NOT NULL AND prev != inside
-    """
-
-
-def _gravity_xy_sql() -> tuple[str, str]:
-    """Shared (x, y) regressor strings over columns (cell_from, cell_to,
-    n_trips, pop_o, pop_d): x = ln(centroid distance) via 0.5·ln(dist²)
-    (no sqrt), y = ln(flow / (pop_o·pop_d)). One string, both engines."""
-    from raptor_service_spark.geo.grid import cell_center_sql
-
-    olat, olng = cell_center_sql("cell_from", _GRAV_RES)
-    dlat, dlng = cell_center_sql("cell_to", _GRAV_RES)
-    d2 = (
-        f"(({olat} - {dlat}) * ({olat} - {dlat})"
-        f" + ({olng} - {dlng}) * ({olng} - {dlng}))"
-    )
-    x = f"(0.5 * LN({d2}))"
-    y = "LN(CAST(n_trips AS DOUBLE) / (pop_o * pop_d))"
-    return x, y
-
-
-_GRAV_RES = 3
-# OLS closed form over the ROUNDED sums (columns n, sx, sy, sxy, sxx) —
-# identical string in both engines, so the ratio is deterministic.
-_GRAV_BETA = "((n * sxy - sx * sy) / (n * sxx - sx * sx))"
-
-
-def q_gravity_fit(spark, sf_dir):
-    """Gravity-model calibration over the OD flow matrix: OLS fit of
-    ln(flow / (pop_o·pop_d)) on ln(centroid distance) — the distance-decay
-    exponent β (and intercept α) of trip distribution, the classic spatial-
-    interaction model. Points are touched twice (OD window, occupancy agg);
-    everything after operates on the O(OD pairs) table: two broadcast pop
-    joins, a codegen ln-projection, ONE scalar agg; the four float sums are
-    rounded to 9 dp before the closed-form ratio (cross-engine protocol)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, _GRAV_RES))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flows = (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell")))
-        .groupBy(F.col("prev_cell").alias("cell_from"), F.col("cell").alias("cell_to"))
-        .agg(F.count(F.lit(1)).alias("n_trips"))
-    )
-    pop = pts.groupBy("cell").agg(F.count(F.lit(1)).alias("pop"))
-    j = (
-        flows.join(
-            F.broadcast(pop.select(F.col("cell").alias("cell_from"), F.col("pop").alias("pop_o"))),
-            "cell_from",
-        )
-        .join(
-            F.broadcast(pop.select(F.col("cell").alias("cell_to"), F.col("pop").alias("pop_d"))),
-            "cell_to",
-        )
-    )
-    xs, ys = _gravity_xy_sql()
-    xy = j.select(F.expr(xs).alias("lx"), F.expr(ys).alias("ly"))
-    sums = xy.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("lx"), 9).alias("sx"),
-        F.round(F.sum("ly"), 9).alias("sy"),
-        F.round(F.sum(F.col("lx") * F.col("ly")), 9).alias("sxy"),
-        F.round(F.sum(F.col("lx") * F.col("lx")), 9).alias("sxx"),
-    )
-    return sums.select(
-        F.col("n").alias("n_pairs"),
-        F.round(F.expr(_GRAV_BETA), 6).alias("beta"),
-        F.round(F.expr(f"(sy - {_GRAV_BETA} * sx) / n"), 6).alias("alpha"),
-    )
-
-
-def _gravity_fit_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _GRAV_RES)
-    xs, ys = _gravity_xy_sql()
-    return f"""
-        WITH p AS (SELECT user_id, ts, event_id, {cell} AS cell FROM events),
-        f AS (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id) AS prev_cell
-              FROM p),
-        fl AS (SELECT prev_cell AS cell_from, cell AS cell_to,
-                      COUNT(*) AS n_trips
-               FROM f WHERE prev_cell IS NOT NULL AND prev_cell != cell
-               GROUP BY 1, 2),
-        pop AS (SELECT cell, COUNT(*) AS pop FROM p GROUP BY 1),
-        j AS (SELECT fl.cell_from, fl.cell_to, fl.n_trips,
-                     po.pop AS pop_o, pd.pop AS pop_d
-              FROM fl JOIN pop po ON po.cell = fl.cell_from
-                      JOIN pop pd ON pd.cell = fl.cell_to),
-        xy AS (SELECT {xs} AS lx, {ys} AS ly FROM j),
-        s AS (SELECT COUNT(*) AS n,
-                     ROUND(SUM(lx), 9) AS sx, ROUND(SUM(ly), 9) AS sy,
-                     ROUND(SUM(lx * ly), 9) AS sxy,
-                     ROUND(SUM(lx * lx), 9) AS sxx
-              FROM xy)
-        SELECT n AS n_pairs,
-               ROUND({_GRAV_BETA}, 6) AS beta,
-               ROUND((sy - {_GRAV_BETA} * sx) / n, 6) AS alpha
-        FROM s
-    """
-
-
-def q_event_funnel(spark, sf_dir):
-    """Sequential conversion funnel (view → click AFTER that view →
-    purchase AFTER that click), the product-analytics staple: per user,
-    earliest view; earliest click strictly after it; earliest purchase
-    strictly after that — strictness on the (ts, event_id) pair so ties
-    are deterministic. All-integer one-row output (exact oracle compare).
-    Scale shape: three map-side-combinable per-user min-aggs + two
-    user-keyed joins of O(users) tables — events are scanned once per
-    stage with the stage's type filter pushed to parquet."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
-    tsl = F.unix_micros(F.col("ts").cast("timestamp"))
-    base = ev.select("user_id", "event_type", tsl.alias("us"), "event_id")
-    views = (
-        base.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min(F.struct("us", "event_id")).alias("v"))
-    )
-    clicks = (
-        base.filter(F.col("event_type") == "click")
-        .join(views, "user_id")
-        .filter(
-            (F.col("us") > F.col("v.us"))
-            | ((F.col("us") == F.col("v.us")) & (F.col("event_id") > F.col("v.event_id")))
-        )
-        .groupBy("user_id")
-        .agg(F.min(F.struct("us", "event_id")).alias("c"))
-    )
-    purchases = (
-        base.filter(F.col("event_type") == "purchase")
-        .join(clicks, "user_id")
-        .filter(
-            (F.col("us") > F.col("c.us"))
-            | ((F.col("us") == F.col("c.us")) & (F.col("event_id") > F.col("c.event_id")))
-        )
-        .groupBy("user_id")
-        .agg(F.lit(1).alias("one"))
-    )
-    n_users = base.select("user_id").distinct().count()
-    return (
-        views.agg(F.count(F.lit(1)).alias("n_view"))
-        .join(F.broadcast(clicks.agg(F.count(F.lit(1)).alias("n_click_after_view"))))
-        .join(
-            F.broadcast(
-                purchases.agg(F.count(F.lit(1)).alias("n_purchase_after_click"))
-            )
-        )
-        .select(
-            F.lit(n_users).cast("long").alias("n_users"),
-            "n_view",
-            "n_click_after_view",
-            "n_purchase_after_click",
-        )
-    )
-
-
-def _event_funnel_sql() -> str:
-    strict = lambda a, b: f"({a}.us > {b}.us OR ({a}.us = {b}.us AND {a}.event_id > {b}.event_id))"
-    return f"""
-        WITH base AS (SELECT user_id, event_type,
-                             epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
-                      FROM events),
-        v AS (SELECT user_id, MIN({{'us': us, 'event_id': event_id}}) AS m FROM base
-              WHERE event_type = 'view' GROUP BY 1),
-        vv AS (SELECT user_id, m.us AS us, m.event_id AS event_id FROM v),
-        c AS (SELECT b.user_id, MIN({{'us': b.us, 'event_id': b.event_id}}) AS m
-              FROM base b JOIN vv ON b.user_id = vv.user_id
-              WHERE b.event_type = 'click' AND {strict('b', 'vv')}
-              GROUP BY 1),
-        cc AS (SELECT user_id, m.us AS us, m.event_id AS event_id FROM c),
-        p AS (SELECT b.user_id
-              FROM base b JOIN cc ON b.user_id = cc.user_id
-              WHERE b.event_type = 'purchase' AND {strict('b', 'cc')}
-              GROUP BY 1)
-        SELECT (SELECT COUNT(DISTINCT user_id) FROM base) AS n_users,
-               (SELECT COUNT(*) FROM v) AS n_view,
-               (SELECT COUNT(*) FROM c) AS n_click_after_view,
-               (SELECT COUNT(*) FROM p) AS n_purchase_after_click
-    """
-
-
-def q_funnel_stages(spark, sf_dir):
-    """Per-user funnel stage-entry events (the row-level form behind
-    `event_funnel`'s counts, and the batch twin of the STREAMING funnel
-    state machine — `streaming/funnel.py`, exact stream==batch parity in
-    tests/test_streaming_funnel.py)."""
-    from raptor_service_spark.streaming.funnel import funnel_stages_batch
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
-    return funnel_stages_batch(ev)
-
-
-def _funnel_stages_sql() -> str:
-    strict = lambda a: f"(b.us > {a}.us OR (b.us = {a}.us AND b.event_id > {a}.event_id))"
-    return f"""
-        WITH base AS (SELECT user_id, event_type,
-                             epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_id
-                      FROM events),
-        v AS (SELECT user_id, MIN({{'us': us, 'event_id': event_id}}) AS m
-              FROM base WHERE event_type = 'view' GROUP BY 1),
-        vv AS (SELECT user_id, m.us AS us, m.event_id AS event_id FROM v),
-        c AS (SELECT b.user_id, MIN({{'us': b.us, 'event_id': b.event_id}}) AS m
-              FROM base b JOIN vv ON b.user_id = vv.user_id
-              WHERE b.event_type = 'click' AND {strict('vv')}
-              GROUP BY 1),
-        cc AS (SELECT user_id, m.us AS us, m.event_id AS event_id FROM c),
-        p AS (SELECT b.user_id, MIN({{'us': b.us, 'event_id': b.event_id}}) AS m
-              FROM base b JOIN cc ON b.user_id = cc.user_id
-              WHERE b.event_type = 'purchase' AND {strict('cc')}
-              GROUP BY 1)
-        SELECT user_id, 1 AS stage, event_id FROM vv
-        UNION ALL
-        SELECT user_id, 2 AS stage, m.event_id FROM c
-        UNION ALL
-        SELECT user_id, 3 AS stage, m.event_id FROM p
-    """
-
-
-def q_user_od_flows(spark, sf_dir):
-    """Origin-destination flow matrix: per-user consecutive event pairs,
-    each end encoded to its res-3 grid cell, cross-cell transitions counted
-    per (cell_from, cell_to). One window shuffle + one partial+final agg —
-    the standard trajectory-analytics rollup over the tile grid."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flows = pts.withColumn("prev_cell", F.lag("cell").over(w)).filter(
-        F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell"))
-    )
-    return (
-        flows.groupBy(
-            F.col("prev_cell").alias("cell_from"), F.col("cell").alias("cell_to")
-        )
-        .agg(F.count(F.lit(1)).alias("n_trips"))
-        .filter(F.col("n_trips") >= 3)
-    )
-
-
-def _user_od_flows_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH p AS (
-            SELECT user_id, ts, event_id, {cell} AS cell FROM events),
-        f AS (
-            SELECT cell,
-                   LAG(cell) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_cell
-            FROM p)
-        SELECT prev_cell AS cell_from, cell AS cell_to, COUNT(*) AS n_trips
-        FROM f WHERE prev_cell IS NOT NULL AND prev_cell != cell
-        GROUP BY 1, 2 HAVING COUNT(*) >= 3
-    """
-
-
-def q_user_stay_points(spark, sf_dir):
-    """Stay-point (dwell) detection: per-user runs of consecutive events in
-    the same res-2 cell, gaps-and-islands run ids from a windowed running
-    sum of cell-change flags, dwell = microsecond span of the run. Two
-    window passes over one user-partitioned shuffle + one agg."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 2))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    chg = F.when(
-        F.lag("cell").over(w).isNull() | (F.lag("cell").over(w) != F.col("cell")),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    run = F.sum(chg).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    return (
-        pts.withColumn("run", run)
-        .groupBy("user_id", "run", "cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (
-                F.unix_micros(F.max("ts").cast("timestamp"))
-                - F.unix_micros(F.min("ts").cast("timestamp"))
-            )
-            .cast("long")
-            .alias("dwell_us"),
-        )
-        .filter(F.col("n_events") >= 2)
-        .drop("run")
-    )
-
-
-def _user_stay_points_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    return f"""
-        WITH p AS (
-            SELECT user_id, ts, event_id, {cell} AS cell FROM events),
-        c AS (
-            SELECT *, CASE WHEN LAG(cell) OVER w IS NULL
-                            OR LAG(cell) OVER w != cell
-                      THEN 1 ELSE 0 END AS chg
-            FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        r AS (
-            SELECT *, CAST(SUM(chg) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id) AS BIGINT) AS run
-            FROM c)
-        SELECT user_id, cell, COUNT(*) AS n_events,
-               CAST(epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS BIGINT) AS dwell_us
-        FROM r GROUP BY user_id, run, cell HAVING COUNT(*) >= 2
-    """
-
-
-def q_traj_cells(spark, sf_dir):
-    """Trajectory rasterization (vector→raster): each consecutive event
-    pair per user is a segment; 9 evenly-spaced interpolation points along
-    it are cell-encoded at res 3 and the per-user covered-cell set is the
-    distinct union. Window lag + JVM sequence explode + distinct — the
-    cheap deterministic supercover used to burn GPS tracks onto the tile
-    grid. Interpolation arithmetic is the identical double formula in both
-    engines."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = (
-        ev.filter(F.col("user_id") < 20)
-        .withColumn("lat", lat)
-        .withColumn("lng", lng)
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = (
-        pts.withColumn("plat", F.lag("lat").over(w))
-        .withColumn("plng", F.lag("lng").over(w))
-        .filter(F.col("plat").isNotNull())
-    )
-    t = F.col("i") / F.lit(8.0)
-    ilat = F.col("plat") + (F.col("lat") - F.col("plat")) * t
-    ilng = F.col("plng") + (F.col("lng") - F.col("plng")) * t
-    return (
-        seg.withColumn("i", F.explode(F.sequence(F.lit(0), F.lit(8))))
-        .select("user_id", cell_encode_col(ilat, ilng, 3).alias("cell"))
-        .distinct()
-    )
-
-
-def _traj_cells_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    ilat = "(plat + (lat - plat) * (i / 8.0))"
-    ilng = "(plng + (lng - plng) * (i / 8.0))"
-    cell = cell_encode_sql(ilat, ilng, 3)
-    return f"""
-        WITH p AS (
-            SELECT user_id, ts, event_id, {lat} AS lat, {lng} AS lng
-            FROM events WHERE user_id < 20),
-        s AS (
-            SELECT user_id, lat, lng,
-                   LAG(lat) OVER w AS plat, LAG(lng) OVER w AS plng
-            FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        SELECT DISTINCT user_id, {cell} AS cell
-        FROM s CROSS JOIN generate_series(0, 8) g(i)
-        WHERE plat IS NOT NULL
-    """
-
-
-def q_hot_cells(spark, sf_dir):
-    """Hot-cell skew diagnostic over the SKEWED synthetic corpus (datagen
-    hotspots): res-4 occupancy counts, global share, top 20. The agg output
-    is tiny (≤ occupied cells), so the global-total window runs on the
-    aggregated table — one partial+final agg plus an O(cells) window. This
-    is the planner input for salting factors (operators/tree.py skew
-    handling)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.datagen import gen_documents_df
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    docs = gen_documents_df(spark, 300, seed=62).select("doc_id", "lat", "lng")
-    counts = docs.groupBy(
-        cell_encode_col(F.col("lat"), F.col("lng"), 4).alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n_docs"))
-    total = F.sum("n_docs").over(Window.partitionBy())
-    return (
-        counts.withColumn("share", F.round(F.col("n_docs") / total, 6))
-        .orderBy(F.col("n_docs").desc(), F.col("cell").asc())
-        .limit(20)
-    )
-
-
-def _hot_cells_sql(n_docs: int = 300, seed: int = 62) -> str:
-    """VALUES oracle from the deterministic local generator (same rows as
-    the distributed mapInPandas path), independent SQL recount."""
-    from raptor_service_spark.datagen import _gen_doc
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    # CAST AS DOUBLE: a bare 16-digit repr parses as DECIMAL in DuckDB,
-    # which can overflow DECIMAL(18) in (lat + 90.0) and would in any case
-    # use exact-decimal arithmetic where Spark uses IEEE doubles
-    vals = ", ".join(
-        f"(CAST({_gen_doc(seed, i)['lat']!r} AS DOUBLE),"
-        f" CAST({_gen_doc(seed, i)['lng']!r} AS DOUBLE))"
-        for i in range(n_docs)
-    )
-    cell = cell_encode_sql("lat", "lng", 4)
-    return f"""
-        WITH d AS (SELECT * FROM (VALUES {vals}) t(lat, lng)),
-        c AS (
-            SELECT {cell} AS cell, COUNT(*) AS n_docs FROM d GROUP BY 1)
-        SELECT cell, n_docs,
-               ROUND(n_docs / (SELECT CAST(SUM(n_docs) AS DOUBLE) FROM c), 6)
-                   AS share
-        FROM c ORDER BY n_docs DESC, cell ASC LIMIT 20
-    """
-
-
 def q_media_caption_attach(spark, sf_dir):
     """Interleaved caption attachment: each media span is paired with the
     nearest PRECEDING text span of the same document (offset order) — the
@@ -2425,585 +1277,6 @@ def _media_caption_attach_sql(n_docs: int = 30, seed: int = 61) -> str:
     )
 
 
-def q_tile_topk_docs(spark, sf_dir):
-    """Per-tile ranking (tile-server op): top-3 documents by quality score
-    inside every occupied res-2 cell. WindowGroupLimit pushes the rank<=3
-    cut below the exchange, so the shuffle carries at most 3 rows per cell
-    per map task — the per-group top-k the reference's per-cluster summary
-    selection needs at serving time."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.functions.text import quality_score
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    scored = d.withColumn("cell", cell_encode_col(lat, lng, 2)).withColumn(
-        "quality", quality_score(F.col("text"))
-    )
-    w = Window.partitionBy("cell").orderBy(
-        F.col("quality").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("cell", F.col("rk").cast("long").alias("rk"), "doc_id", "quality")
-    )
-
-
-def _tile_topk_docs_sql() -> str:
-    from raptor_service_spark.functions.text import quality_score_sql
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    qual = quality_score_sql("text")
-    return f"""
-        WITH s AS (
-            SELECT doc_id, {cell} AS cell, {qual} AS quality FROM documents)
-        SELECT cell,
-               CAST(ROW_NUMBER() OVER (PARTITION BY cell
-                                       ORDER BY quality DESC, doc_id ASC)
-                    AS BIGINT) AS rk,
-               doc_id, quality
-        FROM s QUALIFY rk <= 3
-    """
-
-
-def q_cell_coverage_gap(spark, sf_dir):
-    """Coverage-gap audit: res-4 cells that receive event traffic but hold
-    no indexed documents — the tile tree's 'demand without supply' set.
-    Two map-side-combined distincts + one EXCEPT on O(occupied cells)."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat_e, lng_e = _latlng_cols(F.col("event_id"))
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat_d, lng_d = _latlng_cols(F.col("doc_id"))
-    ecells = ev.select(cell_encode_col(lat_e, lng_e, 4).alias("cell")).distinct()
-    dcells = d.select(cell_encode_col(lat_d, lng_d, 4).alias("cell")).distinct()
-    return ecells.subtract(dcells)
-
-
-def _cell_coverage_gap_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat_e, lng_e = _latlng_sql("event_id")
-    lat_d, lng_d = _latlng_sql("doc_id")
-    ce = cell_encode_sql(lat_e, lng_e, 4)
-    cd = cell_encode_sql(lat_d, lng_d, 4)
-    return f"""
-        SELECT DISTINCT {ce} AS cell FROM events
-        EXCEPT
-        SELECT DISTINCT {cd} AS cell FROM documents
-    """
-
-
-def q_trending_cells(spark, sf_dir):
-    """Spatio-temporal change detection: per-cell hourly event counts, then
-    hour-over-hour delta via a cell-partitioned lag window; top 15 rises.
-    Two shuffles — the (cell, hour) partial+final count and the per-cell
-    window — both on aggregated (occupied cell × hour) rows, never points."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    hourly = (
-        ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-        .groupBy("cell", F.date_trunc("hour", F.col("ts")).alias("hr"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("cell").orderBy("hr")
-    return (
-        hourly.withColumn("delta", F.col("n") - F.lag("n").over(w))
-        .filter(F.col("delta").isNotNull())
-        .orderBy(F.col("delta").desc(), F.col("cell").asc(), F.col("hr").asc())
-        .limit(15)
-        .select(
-            "cell",
-            F.date_format("hr", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "n",
-            "delta",
-        )
-    )
-
-
-def _trending_cells_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH h AS (
-            SELECT {cell} AS cell, date_trunc('hour', ts) AS hr,
-                   COUNT(*) AS n
-            FROM events GROUP BY 1, 2),
-        d AS (
-            SELECT cell, hr, n,
-                   n - LAG(n) OVER (PARTITION BY cell ORDER BY hr) AS delta
-            FROM h)
-        SELECT cell, strftime(hr, '%Y-%m-%d %H:%M:%S') AS hour, n, delta
-        FROM d WHERE delta IS NOT NULL
-        ORDER BY delta DESC, cell ASC, hr ASC LIMIT 15
-    """
-
-
-_IDW_CENTERS = {"c1": (12.0, 30.0), "c2": (-25.0, -100.0), "c3": (48.0, 110.0)}
-_IDW_RADIUS = 25.0
-
-
-def q_idw_interpolation(spark, sf_dir):
-    """Inverse-distance-weighted field estimate at query centers: the
-    filter-refine radius join (broadcast candidate cells, codegen sqrt)
-    feeds a per-center weighted mean of event values — the spatial
-    interpolation a tile-level heat layer needs. One partial+final agg
-    after a shuffle-free join."""
-    from raptor_service_spark.operators.pip_join import radius_join
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    hits = radius_join(pts, _IDW_CENTERS, _IDW_RADIUS, res=4)
-    wgt = F.lit(1.0) / (F.col("dist") + F.lit(0.001))
-    return hits.groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.round(F.sum(F.col("value") * wgt) / F.sum(wgt), 6).alias("idw_value"),
-    )
-
-
-def _idw_interpolation_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    centers = ", ".join(
-        f"('{q}', {la!r}, {ln!r})" for q, (la, ln) in _IDW_CENTERS.items()
-    )
-    return f"""
-        WITH p AS (
-            SELECT value, {lat} AS lat, {lng} AS lng FROM events),
-        c AS (SELECT * FROM (VALUES {centers}) t(qid, clat, clng)),
-        h AS (
-            SELECT qid, value,
-                   ROUND(SQRT((lat - clat) * (lat - clat)
-                              + (lng - clng) * (lng - clng)), 6) AS dist
-            FROM p CROSS JOIN c)
-        SELECT qid, COUNT(*) AS n_points,
-               ROUND(SUM(value * (1.0 / (dist + 0.001)))
-                     / SUM(1.0 / (dist + 0.001)), 6) AS idw_value
-        FROM h WHERE dist <= {_IDW_RADIUS!r} GROUP BY qid
-    """
-
-
-def q_cell_boundaries(spark, sf_dir):
-    """Raster morphology over the doc-occupancy raster: boundary vs interior
-    cells of the occupied region at res 4 (operators/neighborhood.py
-    boundary_cells — ring explode + self-join on the occupied-CELL table,
-    one point shuffle total)."""
-    from raptor_service_spark.operators.neighborhood import boundary_cells
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    return boundary_cells(pts, res=4)
-
-
-def _cell_boundaries_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell4 = cell_encode_sql(lat, lng, 4)
-    offs = ", ".join(
-        f"({dx}, {dy})"
-        for dy in range(-1, 2)
-        for dx in range(-1, 2)
-        if (dx, dy) != (0, 0)
-    )
-    nbr = kring_neighbor_sql("c.cell", 4, "o.dx", "o.dy")
-    return f"""
-        WITH c AS (SELECT {cell4} AS cell, COUNT(*) AS n_points
-                   FROM documents GROUP BY 1),
-        p AS (SELECT c.cell, c.n_points, {nbr} AS nbr
-              FROM c CROSS JOIN (VALUES {offs}) o(dx, dy)
-              WHERE {nbr} IS NOT NULL)
-        SELECT p.cell, MAX(p.n_points) AS n_points,
-               COUNT(c2.cell) AS n_occ_nbrs,
-               COUNT(c2.cell) < 8 AS is_boundary
-        FROM p LEFT JOIN c c2 ON p.nbr = c2.cell
-        GROUP BY 1
-    """
-
-
-_HEAT_REF_US = 1706659200 * 1_000_000  # 2024-01-31 00:00:00 UTC
-_HEAT_TAU_US = 7 * 86400 * 1_000_000.0  # 7-day decay constant
-
-
-def q_cell_heat_decay(spark, sf_dir):
-    """Time-decayed heat layer: per res-3 cell, sum of exp(-age/τ) event
-    weights relative to a fixed reference instant — the freshness-weighted
-    occupancy a live tile heatmap serves. One partial+final agg; the decay
-    weight is codegen arithmetic (exp parity with DuckDB is the same IEEE
-    contract the haversine queries already rely on)."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    age_us = F.lit(_HEAT_REF_US) - F.unix_micros(F.col("ts").cast("timestamp"))
-    w = F.exp(-age_us / F.lit(_HEAT_TAU_US))
-    return (
-        ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(w), 6).alias("heat"),
-        )
-    )
-
-
-def _cell_heat_decay_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    w = f"EXP(-({_HEAT_REF_US} - epoch_us(ts)) / {_HEAT_TAU_US!r})"
-    return f"""
-        SELECT {cell} AS cell, COUNT(*) AS n_events,
-               ROUND(SUM({w}), 6) AS heat
-        FROM events GROUP BY 1
-    """
-
-
-def q_cell_top_terms(spark, sf_dir):
-    """Geo-text crossover: per res-2 cell, top-3 terms across the documents
-    anchored there — the regional vocabulary summary a dataset card shows
-    per map region. Explode → two-phase (cell, term) count → per-cell
-    window top-k (WindowGroupLimit cuts below the exchange)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    terms = d.withColumn("cell", cell_encode_col(lat, lng, 2)).select(
-        "cell", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term")
-    )
-    counts = (
-        terms.filter(F.col("term") != "")
-        .groupBy("cell", "term")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    win = Window.partitionBy("cell").orderBy(F.col("n").desc(), F.col("term").asc())
-    return (
-        counts.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= 3)
-        .select("cell", "term", "n", F.col("rk").cast("long").alias("rk"))
-    )
-
-
-def _cell_top_terms_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    return f"""
-        WITH t AS (
-            SELECT {cell} AS cell,
-                   UNNEST(string_split_regex(lower(trim(text)), '\\s+')) AS term
-            FROM documents),
-        c AS (
-            SELECT cell, term, COUNT(*) AS n FROM t
-            WHERE term != '' GROUP BY 1, 2)
-        SELECT cell, term, n,
-               CAST(ROW_NUMBER() OVER (PARTITION BY cell
-                                       ORDER BY n DESC, term ASC) AS BIGINT) AS rk
-        FROM c QUALIFY rk <= 3
-    """
-
-
-_ASSIGN_EPS = 5.0
-
-
-def q_nearest_doc_assignment(spark, sf_dir):
-    """Bounded-ε nearest-neighbor assignment (visit attribution): each event
-    is attributed to its closest document within ε degrees — the table×table
-    k=1 spatial join. The ε-bound is what makes it scale: candidates come
-    from the one-shuffle cell/ring equi-join (each pair found exactly once),
-    then a per-event WindowGroupLimit keeps the minimum. Events with no doc
-    within ε drop out (same rule in the oracle)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    ev = _read(spark, sf_dir, "events").select("event_id").filter(
-        F.col("event_id") < 2000
-    )
-    lat_e, lng_e = _latlng_cols(F.col("event_id"))
-    epts = ev.withColumn("lat", lat_e).withColumn("lng", lng_e)
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat_d, lng_d = _latlng_cols(F.col("doc_id"))
-    dpts = d.withColumn("lat", lat_d).withColumn("lng", lng_d)
-    pairs = within_distance_join(epts, dpts, eps=_ASSIGN_EPS).select(
-        F.col("l.event_id").alias("event_id"),
-        F.col("r.doc_id").alias("doc_id"),
-        "dist",
-    )
-    w = Window.partitionBy("event_id").orderBy(
-        F.col("dist").asc(), F.col("doc_id").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("event_id", "doc_id", "dist")
-    )
-
-
-def _nearest_doc_assignment_sql() -> str:
-    lat_e, lng_e = _latlng_sql("e.event_id")
-    lat_d, lng_d = _latlng_sql("d.doc_id")
-    dist = (
-        f"ROUND(SQRT(({lat_e} - {lat_d}) * ({lat_e} - {lat_d})"
-        f" + ({lng_e} - {lng_d}) * ({lng_e} - {lng_d})), 6)"
-    )
-    return f"""
-        SELECT e.event_id, d.doc_id, {dist} AS dist
-        FROM events e CROSS JOIN documents d
-        WHERE e.event_id < 2000 AND {dist} <= {_ASSIGN_EPS!r}
-        QUALIFY ROW_NUMBER() OVER (PARTITION BY e.event_id
-                                   ORDER BY dist ASC, d.doc_id ASC) = 1
-    """
-
-
-def q_user_home_cells(spark, sf_dir):
-    """Per-user home cell: the res-3 cell where the user has the most
-    events (ties broken by cell id) — the anchor-location primitive of
-    trajectory analytics. Two-phase (user, cell) count, then a per-user
-    WindowGroupLimit argmax."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    counts = (
-        ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-        .groupBy("user_id", "cell")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("n_events").desc(), F.col("cell").asc()
-    )
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("user_id", "cell", "n_events")
-    )
-
-
-def _user_home_cells_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH c AS (
-            SELECT user_id, {cell} AS cell, COUNT(*) AS n_events
-            FROM events GROUP BY 1, 2)
-        SELECT user_id, cell, n_events
-        FROM c QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id
-                                          ORDER BY n_events DESC, cell ASC) = 1
-    """
-
-
-def q_events_value_histogram(spark, sf_dir):
-    """Equi-width histogram of event values (width 25, clamped to 20 bins):
-    one codegen bin Project + one partial+final agg — the profiling scan a
-    pipeline runs before choosing quantization/binning constants."""
-    ev = _read(spark, sf_dir, "events").select("value")
-    bin_ = F.least(F.lit(19), F.floor(F.col("value") / F.lit(25.0))).cast("long")
-    return (
-        ev.groupBy(bin_.alias("bin"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.min("value"), 6).alias("lo"),
-            F.round(F.max("value"), 6).alias("hi"),
-        )
-    )
-
-
-def _events_value_histogram_sql() -> str:
-    return """
-        SELECT LEAST(19, CAST(FLOOR(value / 25.0) AS BIGINT)) AS bin,
-               COUNT(*) AS n,
-               ROUND(MIN(value), 6) AS lo, ROUND(MAX(value), 6) AS hi
-        FROM events GROUP BY 1
-    """
-
-
-def q_cell_value_median(spark, sf_dir):
-    """Exact per-cell median of event values (res 3): Spark's exact
-    `percentile` aggregate (sort-based within the group) vs DuckDB
-    `median` — both interpolate the even-count midpoint. Group cardinality
-    is O(occupied cells), so the sort cost is per-cell, never global."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    return (
-        ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.expr("percentile(value, 0.5)"), 6).alias("median_value"),
-        )
-    )
-
-
-def _cell_value_median_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        SELECT {cell} AS cell, COUNT(*) AS n_events,
-               ROUND(MEDIAN(value), 6) AS median_value
-        FROM events GROUP BY 1
-    """
-
-
-def q_media_density_per_cell(spark, sf_dir):
-    """Interleaved × spatial crossover: per res-2 cell, the media-span
-    share of the synthetic corpus anchored there — the modality-mix map a
-    multimodal training pipeline balances against. Span counting is a JVM
-    higher-order filter on the spans array (no explode, no Python); one
-    partial+final agg."""
-    from raptor_service_spark.datagen import gen_documents_df
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    docs = gen_documents_df(spark, 200, seed=63)
-    per_doc = docs.select(
-        cell_encode_col(F.col("lat"), F.col("lng"), 2).alias("cell"),
-        F.size("spans").alias("n_spans"),
-        F.size(F.filter("spans", lambda s: s["media_ref"] != "")).alias("n_media"),
-    )
-    return per_doc.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_spans").cast("long").alias("n_spans"),
-        F.sum("n_media").cast("long").alias("n_media"),
-        F.round(F.sum("n_media") / F.sum("n_spans"), 6).alias("media_frac"),
-    )
-
-
-def _media_density_per_cell_sql(n_docs: int = 200, seed: int = 63) -> str:
-    """VALUES oracle: per-doc ground truth from the deterministic generator
-    (lat, lng, span counts); DuckDB recomputes the spatial aggregation
-    independently."""
-    from raptor_service_spark.datagen import _gen_doc
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    vals = []
-    for i in range(n_docs):
-        d = _gen_doc(seed, i)
-        n_media = sum(1 for s in d["spans"] if s["media_ref"])
-        vals.append(
-            f"(CAST({d['lat']!r} AS DOUBLE), CAST({d['lng']!r} AS DOUBLE), "
-            f"{len(d['spans'])}, {n_media})"
-        )
-    cell = cell_encode_sql("lat", "lng", 2)
-    return f"""
-        WITH d AS (SELECT * FROM (VALUES {', '.join(vals)})
-                   t(lat, lng, n_spans, n_media))
-        SELECT {cell} AS cell, COUNT(*) AS n_docs,
-               CAST(SUM(n_spans) AS BIGINT) AS n_spans,
-               CAST(SUM(n_media) AS BIGINT) AS n_media,
-               ROUND(SUM(n_media) / CAST(SUM(n_spans) AS DOUBLE), 6) AS media_frac
-        FROM d GROUP BY 1
-    """
-
-
-def q_user_gyration(spark, sf_dir):
-    """Radius of gyration per user (mobility dispersion): RMS distance from
-    the user's own centroid, in the algebraic one-pass form
-    sqrt(E[lat²]−E[lat]² + E[lng²]−E[lng]²) — ONE partial+final agg, no
-    second pass over the events. Degree-space euclid (the repo's planar
-    convention); greatest(0, ·) guards the tiny negative residue float
-    cancellation can leave."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    var = (
-        F.avg(F.col("lat") * F.col("lat"))
-        - F.avg("lat") * F.avg("lat")
-        + F.avg(F.col("lng") * F.col("lng"))
-        - F.avg("lng") * F.avg("lng")
-    )
-    return pts.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sqrt(F.greatest(F.lit(0.0), var)), 6).alias("gyration_deg"),
-    )
-
-
-def _user_gyration_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    return f"""
-        WITH p AS (SELECT user_id, {lat} AS lat, {lng} AS lng FROM events)
-        SELECT user_id, COUNT(*) AS n_events,
-               ROUND(SQRT(GREATEST(0.0,
-                   AVG(lat * lat) - AVG(lat) * AVG(lat)
-                   + AVG(lng * lng) - AVG(lng) * AVG(lng))), 6) AS gyration_deg
-        FROM p GROUP BY 1
-    """
-
-
-def q_user_cell_entropy(spark, sf_dir):
-    """Exploration diversity per user: Shannon entropy of the user's res-3
-    cell-visit distribution, −Σ p·ln p. Two-phase (user, cell) count, then
-    a per-user agg that reuses the same partitioning — the standard
-    mobility-predictability feature."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    counts = (
-        ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-        .groupBy("user_id", "cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tot = F.sum("n")
-    ent = -F.sum(F.col("sn") * F.log(F.col("sn")))
-    return (
-        counts.groupBy("user_id")
-        .agg(
-            tot.cast("long").alias("n_events"),
-            F.count(F.lit(1)).cast("long").alias("n_cells"),
-            (F.sum(F.col("n") * F.log("n")) / tot).alias("_snlogn"),
-        )
-        .select(
-            "user_id",
-            "n_events",
-            "n_cells",
-            F.round(
-                F.log(F.col("n_events")) - F.col("_snlogn"), 6
-            ).alias("entropy"),
-        )
-    )
-
-
-def _user_cell_entropy_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH c AS (
-            SELECT user_id, {cell} AS cell, COUNT(*) AS n
-            FROM events GROUP BY 1, 2)
-        SELECT user_id, CAST(SUM(n) AS BIGINT) AS n_events,
-               COUNT(*) AS n_cells,
-               ROUND(LN(CAST(SUM(n) AS BIGINT))
-                     - SUM(n * LN(n)) / SUM(n), 6) AS entropy
-        FROM c GROUP BY 1
-    """
-
-
 def q_doc_scrub(spark, sf_dir):
     """Training-data scrub stage (functions/text.py redact_pii +
     strip_markup): PII is injected deterministically per doc (the driver
@@ -3056,258 +1329,6 @@ def _doc_scrub_sql() -> str:
         )
     )
     return f"SELECT doc_id, md5({red}) AS scrub_fp, {counts} FROM documents"
-
-
-def q_events_tile_hourly(spark, sf_dir):
-    """Batch twin of the streaming tile-count aggregation (streaming/geo.py
-    windowed_tile_counts — ONE definition for both modes; stream/batch
-    parity is pytest-asserted in tests/test_streaming_geo.py). Points =
-    events with the user's hash geo anchor."""
-    from raptor_service_spark.streaming.geo import windowed_tile_counts
-
-    ev = _read(spark, sf_dir, "events").select("ts", "user_id")
-    lat, lng = _latlng_cols(F.col("user_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    out = windowed_tile_counts(pts, res=4, window="1 hour")
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
-        "cell",
-        "n_points",
-    )
-
-
-def _events_tile_hourly_sql() -> str:
-    lat, lng = _latlng_sql("user_id")
-    cell4 = cell_encode_sql(lat, lng, 4)
-    return f"""
-        SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-               {cell4} AS cell, COUNT(*) AS n_points
-        FROM events GROUP BY 1, 2
-    """
-
-
-def _tri_param_cols():
-    """Five 1..4-degree params from the id (same arithmetic in SQL)."""
-    d = F.col("doc_id")
-    return [
-        (F.pmod(F.floor(d / F.lit(4**i)), F.lit(4)) + F.lit(1)).cast("double")
-        for i in range(5)
-    ]
-
-
-def q_tri_overlap_docs(spark, sf_dir):
-    """Exact polygon∩polygon join (operators/polygon_join.py): per-doc CCW
-    triangles (apex-up construction guarantees winding), bbox cover-cell
-    candidates, codegen SAT refine — same generated expression as the SQL
-    oracle."""
-    from raptor_service_spark.operators.polygon_join import triangle_self_join
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    a, b, c, e, g = _tri_param_cols()
-    tris = d.select(
-        "doc_id",
-        lng.alias("x1"),
-        (lat + a).alias("y1"),
-        (lng - b).alias("x2"),
-        (lat - c).alias("y2"),
-        (lng + e).alias("x3"),
-        (lat - g).alias("y3"),
-    )
-    return triangle_self_join(tris, res=5, id_col="doc_id")
-
-
-def _tri_overlap_docs_sql() -> str:
-    from raptor_service_spark.operators.polygon_join import sat_intersect_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    params = [
-        f"(CAST(FLOOR(doc_id / {4**i}) AS BIGINT) % 4 + 1)" for i in range(5)
-    ]
-    a, b, c, e, g = params
-    verts = (
-        f"{lng} AS x1, {lat} + {a} AS y1, "
-        f"{lng} - {b} AS x2, {lat} - {c} AS y2, "
-        f"{lng} + {e} AS x3, {lat} - {g} AS y3"
-    )
-    ren_a = ", ".join(f"x{i} AS a_x{i}, y{i} AS a_y{i}" for i in (1, 2, 3))
-    ren_b = ", ".join(f"x{i} AS b_x{i}, y{i} AS b_y{i}" for i in (1, 2, 3))
-    return f"""
-        WITH t AS (SELECT doc_id, {verts} FROM documents)
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM (SELECT doc_id, {ren_a} FROM t) a
-        JOIN (SELECT doc_id, {ren_b} FROM t) b
-          ON a.doc_id < b.doc_id AND {sat_intersect_sql("a", "b")}
-    """
-
-
-_KM_CENTERS = {"k1": (48.8, 2.3), "k2": (-33.8, 151.2), "k3": (75.0, -40.0)}
-_KM_RADIUS = 900.0
-
-
-def q_radius_km_docs(spark, sf_dir):
-    """Great-circle within-900-km join (operators/pip_join.radius_join_km):
-    wrap-aware bbox candidate cells + codegen haversine refine; k3 sits at
-    75°N where the 1/cos lng widening matters."""
-    from raptor_service_spark.operators.pip_join import radius_join_km
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    return radius_join_km(pts, _KM_CENTERS, _KM_RADIUS, res=5).select(
-        "qid", "doc_id", "dist_km"
-    )
-
-
-def _radius_km_docs_sql() -> str:
-    from raptor_service_spark.geo.distance import haversine_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    vals = ", ".join(
-        f"('{q}', {la}, {ln})" for q, (la, ln) in _KM_CENTERS.items()
-    )
-    d = haversine_sql(lat, lng, "clat", "clng")
-    return f"""
-        SELECT qid, doc_id, ROUND({d}, 6) AS dist_km
-        FROM documents CROSS JOIN (VALUES {vals}) q(qid, clat, clng)
-        WHERE ROUND({d}, 6) <= {_KM_RADIUS}
-    """
-
-
-def q_tile_pyramid(spark, sf_dir):
-    """Multi-resolution rollup (operators/tiles.tile_pyramid): counts at res
-    6/4/2 from ONE scan + ONE shuffle (exploded parent ladder, partial agg
-    map-side)."""
-    from raptor_service_spark.operators.tiles import tile_pyramid
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    return tile_pyramid(pts, resolutions=(6, 4, 2))
-
-
-def _tile_pyramid_sql() -> str:
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    lat, lng = _latlng_sql("doc_id")
-    cell6 = cell_encode_sql(lat, lng, 6)
-    p4 = cell_parent_sql(cell6, 6, 4)
-    p2 = cell_parent_sql(cell6, 6, 2)
-    return f"""
-        SELECT CAST(FLOOR(cell / {RES_MULTIPLIER}) AS BIGINT) AS res,
-               cell, COUNT(*) AS n_points
-        FROM (SELECT unnest([{cell6}, {p4}, {p2}]) AS cell FROM documents)
-        GROUP BY 1, 2
-    """
-
-
-def q_density_gradient(spark, sf_dir):
-    """Map-algebra focal statistics: Sobel gradient of the res-5 document
-    density raster — per occupied cell, (gx, gy, |∇|²) of the count
-    surface, all-integer so the oracle compare is EXACT. The weighted ring
-    is a literal struct array exploded JVM-side; one point shuffle, then
-    O(occupied cells) join + agg. See `operators/neighborhood.py`."""
-    from raptor_service_spark.operators.neighborhood import focal_gradient
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    return focal_gradient(pts, res=5)
-
-
-def _density_gradient_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import focal_gradient_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell5 = cell_encode_sql(lat, lng, 5)
-    return focal_gradient_sql("documents", cell5, res=5)
-
-
-def q_clark_evans(spark, sf_dir):
-    """Clark-Evans nearest-neighbor index over document points: R =
-    observed mean NN distance / expected (0.5/√λ) under complete spatial
-    randomness, λ = n over the point bbox area — R < 1 clustered, ≈ 1
-    random, → 2.15 maximally dispersed. NN distances come from the exact
-    ring-doubling self-NN join (`operators/geo_knn.py:nn_distances`);
-    the statistic is two tiny global aggs. The brute-force oracle proves
-    the self-NN join exact."""
-    from raptor_service_spark.operators.geo_knn import nn_distances
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(F.col("doc_id").alias("pid"), lng.alias("px"), lat.alias("py"))
-    nn = nn_distances(pts, res=5)
-    bbox = pts.agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.max("px") - F.min("px")).alias("w"),
-        (F.max("py") - F.min("py")).alias("h"),
-    )
-    stats = nn.agg(F.round(F.avg("d1"), 9).alias("md9"))
-    return (
-        stats.join(F.broadcast(bbox))
-        .select(
-            F.col("n").alias("n_points"),
-            F.round("md9", 6).alias("mean_nnd"),
-            F.round(
-                F.col("md9") * F.lit(2.0) * F.sqrt(F.col("n") / (F.col("w") * F.col("h"))),
-                6,
-            ).alias("r_index"),
-        )
-    )
-
-
-def _clark_evans_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    return f"""
-        WITH p AS (SELECT doc_id AS pid, {lng} AS px, {lat} AS py FROM documents),
-        d AS (SELECT a.pid,
-                     MIN(SQRT((a.px - b.px) * (a.px - b.px)
-                            + (a.py - b.py) * (a.py - b.py))) AS d1
-              FROM p a JOIN p b ON a.pid != b.pid
-              GROUP BY 1),
-        s AS (SELECT ROUND(AVG(d1), 9) AS md9 FROM d),
-        bb AS (SELECT COUNT(*) AS n, MAX(px) - MIN(px) AS w,
-                      MAX(py) - MIN(py) AS h FROM p)
-        SELECT bb.n AS n_points,
-               ROUND(s.md9, 6) AS mean_nnd,
-               ROUND(s.md9 * 2.0 * SQRT(bb.n / (bb.w * bb.h)), 6) AS r_index
-        FROM s CROSS JOIN bb
-    """
-
-
-def q_cell_kring_smooth(spark, sf_dir):
-    """K-ring neighborhood smoothing (operators/neighborhood.py): per
-    occupied res-6 cell, own count + 1-ring summed count + occupied-ring
-    size. Ring expansion is a literal (dx, dy) array exploded JVM-side."""
-    from raptor_service_spark.operators.neighborhood import kring_smooth
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    return kring_smooth(pts, res=6, k=1)
-
-
-def _cell_kring_smooth_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell6 = cell_encode_sql(lat, lng, 6)
-    offs = ", ".join(
-        f"({dx}, {dy})" for dy in range(-1, 2) for dx in range(-1, 2)
-    )
-    nbr = kring_neighbor_sql("c.cell", 6, "o.dx", "o.dy")
-    return f"""
-        WITH c AS (SELECT {cell6} AS cell, COUNT(*) AS n_points
-                   FROM documents GROUP BY 1),
-        p AS (SELECT c.cell, c.n_points, {nbr} AS nbr
-              FROM c CROSS JOIN (VALUES {offs}) o(dx, dy)
-              WHERE {nbr} IS NOT NULL)
-        SELECT p.cell, MAX(p.n_points) AS n_points,
-               CAST(SUM(COALESCE(c2.n_points, 0)) AS BIGINT) AS ring_points,
-               COUNT(c2.cell) AS n_ring_cells
-        FROM p LEFT JOIN c c2 ON p.nbr = c2.cell
-        GROUP BY 1
-    """
 
 
 def q_spans_explode(spark, sf_dir):
@@ -3373,11 +1394,11 @@ def q_ivf_knn_ann(spark, sf_dir):
     9-dp per-round rounding, argmax tie -> smaller cid): train 3 Lloyd
     rounds, assign every vector its list, probe the 6 of 16 lists nearest
     the query, exact cosine top-10 inside the probed lists only. Fully
-    oracle-checked (round-3: the training rounds unroll as MATERIALIZED
+    oracle-checked (the training rounds unroll as MATERIALIZED
     CTEs in DuckDB — the kmeans_geo technique); the sampled k-means++
     production trainer stays covered by ivf_knn_exact + tests/test_ivf.py.
     Reference semantics: pgvector HNSW ANN probe
-    (/root/reference/db/models/embeddings.py:38-43)."""
+    (reference db/models/embeddings.py:38-43)."""
     from raptor_service_spark.operators.ivf import (
         assign_cids_det_udf,
         normalize_vec_col,
@@ -3518,7 +1539,7 @@ def q_ivf_knn_exact(spark, sf_dir):
 
 def q_tree_build_synthetic(spark, sf_dir):
     """Full tile-tree build on the synthetic interleaved corpus (R1-R4).
-    Round-3: fully oracle-checked — the deterministic generator's per-doc
+    Fully oracle-checked — the deterministic generator's per-doc
     (lat, lng, n_spans) rows are emitted as a golden VALUES table (the
     span_roundtrip_check technique) and the ladder arithmetic (leaf cells →
     distinct-parent coarsening → stall guard → root promotion, reference
@@ -3824,7 +1845,7 @@ def _tree_build_overlap_sql() -> str:
 
 def q_collapsed_retrieval_synthetic(spark, sf_dir):
     """Engine-native collapsed retrieval (R5) on the synthetic corpus.
-    Round-3: fully oracle-checked. The REAL pipeline runs here (distributed
+    Fully oracle-checked. The REAL pipeline runs here (distributed
     datagen → explode → hash-embed → build_tile_tree → collapsed_retrieve);
     the DuckDB twin gets the deterministic corpus + the summarizer/embedder
     model outputs as golden VALUES (an independent pure-Python replay of
@@ -3850,7 +1871,7 @@ def q_collapsed_retrieval_synthetic(spark, sf_dir):
 
 def q_traversal_retrieval_synthetic(spark, sf_dir):
     """Engine-native traversal-beam retrieval (R6) on the synthetic corpus;
-    round-3 fully oracle-checked (same golden-VALUES scheme as the
+    fully oracle-checked (same golden-VALUES scheme as the
     collapsed twin; the beam hops — root → global-top-8 level-1 cells →
     global-top-8 leaves → gather re-rank — unroll as SQL stages).
     Reference retrieval_repo.py:350-436."""
@@ -4088,185 +2109,6 @@ def _traversal_retrieval_synthetic_sql() -> str:
     """
 
 
-def q_asof_prior_click(spark, sf_dir):
-    """As-of join (graft-new §2.13): every purchase event gets the latest
-    click by the same user at or before its timestamp — union + per-key
-    ordered window fill (ONE shuffle, no range-join blowup); oracle is the
-    deterministic correlated form of DuckDB's ASOF JOIN."""
-    from raptor_service_spark.operators.asof import asof_join
-
-    ev = _read(spark, sf_dir, "events")
-    out = asof_join(
-        ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts"),
-        ev.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id", "value"
-        ),
-        key="user_id",
-        ts="ts",
-        payload_cols=["event_id", "value"],
-        tiebreak="event_id",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        F.col("prior_event_id").alias("click_id"),
-        F.round("prior_value", 6).alias("click_value"),
-    )
-
-
-_ASOF_PRIOR_CLICK_SQL = """
-    SELECT l.event_id, l.user_id,
-           (SELECT r.event_id FROM events r
-            WHERE r.user_id = l.user_id AND r.event_type = 'click'
-              AND r.ts <= l.ts
-            ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS click_id,
-           (SELECT ROUND(r.value, 6) FROM events r
-            WHERE r.user_id = l.user_id AND r.event_type = 'click'
-              AND r.ts <= l.ts
-            ORDER BY r.ts DESC, r.event_id DESC LIMIT 1) AS click_value
-    FROM events l WHERE l.event_type = 'purchase'
-"""
-
-
-def q_click_purchase_join(spark, sf_dir):
-    """Interval (attribution-window) join: every click by the same user in
-    the 30 min before each purchase. The SAME operator runs as a
-    watermarked stream-stream join (streaming/events.py — state expires by
-    the time bound); batch mode plans an equi-join on user_id with the
-    range as a join filter. Parity: tests/test_tiles_nav_streaming.py."""
-    from raptor_service_spark.streaming.events import click_purchase_interval_join
-
-    ev = _read(spark, sf_dir, "events")
-    return click_purchase_interval_join(
-        ev.filter(F.col("event_type") == "purchase"),
-        ev.filter(F.col("event_type") == "click"),
-    )
-
-
-_CLICK_PURCHASE_SQL = """
-    SELECT p.event_id AS purchase_id, p.user_id, c.event_id AS click_id,
-           ROUND(c.value, 6) AS click_value
-    FROM events p JOIN events c
-      ON p.user_id = c.user_id AND p.event_type = 'purchase'
-     AND c.event_type = 'click'
-     AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE
-"""
-
-
-def q_events_rollup(spark, sf_dir):
-    """ROLLUP grouping-sets aggregation: per (event_type, day), per
-    event_type, and grand total in one pass (Spark expands grouping sets
-    inside a single partial+final hash aggregate)."""
-    ev = _read(spark, sf_dir, "events")
-    d = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-    return (
-        ev.select(F.col("event_type"), d.alias("day"), "value")
-        .rollup("event_type", "day")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-    )
-
-
-_EVENTS_ROLLUP_SQL = """
-    SELECT event_type, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-           COUNT(*) AS n_events, ROUND(SUM(value), 4) AS sum_value
-    FROM events GROUP BY ROLLUP (event_type, day)
-"""
-
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def q_events_pivot(spark, sf_dir):
-    """Pivot (long→wide reshape): per-day value sums with one column per
-    event type. The type list is supplied explicitly so Spark skips the
-    extra distinct-scan pass and plans ONE partial+final hash aggregate
-    (pivot_first, whole-stage codegen) — at scale the wide table is built
-    in the same single shuffle as a plain groupBy."""
-    ev = _read(spark, sf_dir, "events")
-    d = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-    return (
-        ev.select(d.alias("day"), "event_type", "value")
-        .groupBy("day")
-        .pivot("event_type", _EVENT_TYPES)
-        .agg(F.round(F.sum("value"), 4))
-    )
-
-
-_EVENTS_PIVOT_SQL = (
-    "SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, "
-    + ", ".join(
-        f"ROUND(SUM(value) FILTER (WHERE event_type = '{t}'), 4) AS {t}"
-        for t in _EVENT_TYPES
-    )
-    + " FROM events GROUP BY 1"
-)
-
-
-def q_events_sliding(spark, sf_dir):
-    """Hopping-window aggregation (2 h windows sliding 1 h): each event
-    lands in exactly two windows; Spark expands the membership inline (no
-    self-union) and aggregates in one shuffle. The identical window spec
-    drives the streaming path (streaming/events.py), so batch and stream
-    share window semantics."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("win_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-_EVENTS_SLIDING_SQL = """
-    SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS win_start, event_type,
-           COUNT(*) AS n_events, ROUND(SUM(value), 4) AS sum_value
-    FROM (SELECT event_type, value,
-                 unnest([date_trunc('hour', ts),
-                         date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS ws
-          FROM events)
-    GROUP BY 1, 2
-"""
-
-
-def q_user_running_stats(spark, sf_dir):
-    """Window frames: per-user cumulative sum (UNBOUNDED PRECEDING) and
-    3-row moving average over the event stream ordered by (ts, event_id) —
-    the running-aggregate shape behind rate counters and drift monitors.
-    One shuffle on user_id serves both frames."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").filter(F.col("user_id") < 20)
-    ob = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.sum("value").over(ob.rowsBetween(Window.unboundedPreceding, 0)), 4).alias(
-            "cum_value"
-        ),
-        F.round(F.avg("value").over(ob.rowsBetween(-2, 0)), 6).alias("mov_avg3"),
-    )
-
-
-_USER_RUNNING_SQL = """
-    SELECT event_id, user_id,
-           ROUND(SUM(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS UNBOUNDED PRECEDING), 4) AS cum_value,
-           ROUND(AVG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS mov_avg3
-    FROM events WHERE user_id < 20
-"""
-
-
 def q_train_decontam(spark, sf_dir):
     """Benchmark decontamination: train-split docs sharing any distinct word
     5-gram with a held-out test-split doc — the n-gram-overlap contamination
@@ -4407,7 +2249,7 @@ def q_span_roundtrip_check(spark, sf_dir):
 
 def q_media_features(spark, sf_dir):
     """Multimodal feature extraction (UDF surface 7) from DECODED pixels:
-    round 3 replaced the decode stub with the real RTv1|w|h|RLE raster
+    the decode is the real RTv1|w|h|RLE raster
     codec (operators/tiles.py:encode_raster/decode_raster) — the feature is
     the first 8 pixels of the parsed raster. Oracle-checked: the corpus is
     deterministic from (seed, i) alone (datagen._gen_doc, pure numpy), so
@@ -4466,920 +2308,9 @@ def _span_roundtrip_sql(n_docs: int = 50, seed: int = 60) -> str:
 
 
 # ---------------------------------------------------------------------------
-# spatial statistics: Moran's I, Getis-Ord Gi* (operators/spatial_stats.py)
-# ---------------------------------------------------------------------------
-
-
-def q_morans_i(spark, sf_dir):
-    """Global spatial autocorrelation of the res-5 document density surface
-    (queen 1-ring weights over occupied cells). One point shuffle, then
-    O(occupied cells) ring join — scale notes in operators/spatial_stats.py."""
-    from raptor_service_spark.operators.spatial_stats import morans_i
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    return morans_i(d.withColumn("lat", lat).withColumn("lng", lng), res=5)
-
-
-def _morans_i_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import morans_i_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    return morans_i_sql("documents", lat, lng, res=5)
-
-
-def q_getis_hotspots(spark, sf_dir):
-    """Getis-Ord Gi* hot-spot z-scores per occupied res-4 cell, 20 hottest.
-    Same ring algebra as morans_i; z rounded to 6 dp, tie-broken on cell."""
-    from raptor_service_spark.operators.spatial_stats import getis_gi_star
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    return getis_gi_star(
-        d.withColumn("lat", lat).withColumn("lng", lng), res=4, top_k=20
-    )
-
-
-def _getis_hotspots_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import getis_gi_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    return getis_gi_sql("documents", lat, lng, res=4, top_k=20)
-
-
-# ---------------------------------------------------------------------------
-# trajectory-similarity join: users whose visited-cell sets match
-# ---------------------------------------------------------------------------
-
-
-def q_similar_users(spark, sf_dir):
-    """Exact trajectory-similarity join: Jaccard >= 0.5 between per-user
-    visited res-4 cell SETS, via the generic prefix-filtered set-similarity
-    join (operators/dedup.py set_jaccard_pairs — ids are users, elements are
-    cells; candidacy bound and exactness argument identical to
-    ngram_jaccard_pairs). A twin cohort (user_id + 1000, same events) is
-    unioned in so the expected output provably contains J=1.0 pairs. Scale:
-    no all-pairs anywhere — the inverted index is frequency-pruned, hot cells
-    fall outside every prefix."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.dedup import set_jaccard_pairs
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "user_id")
-        .filter(F.col("user_id") < 50)
-    )
-    ev = ev.unionByName(
-        ev.select("event_id", (F.col("user_id") + F.lit(1000)).alias("user_id"))
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cells = ev.select(
-        F.col("user_id").alias("id"), cell_encode_col(lat, lng, 4).alias("g")
-    ).dropDuplicates(["id", "g"])
-    pairs = set_jaccard_pairs(cells, threshold=0.5)
-    return pairs.select(
-        F.col("doc_a").alias("user_a"), F.col("doc_b").alias("user_b"), "jaccard"
-    )
-
-
-def _similar_users_sql() -> str:
-    from raptor_service_spark.operators.dedup import jaccard_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell4 = cell_encode_sql(lat, lng, 4)
-    jac = jaccard_sql("a.gs", "b.gs")
-    return f"""
-        WITH e AS (SELECT event_id, user_id FROM events WHERE user_id < 50
-                   UNION ALL
-                   SELECT event_id, user_id + 1000 FROM events WHERE user_id < 50),
-        c AS (SELECT DISTINCT user_id AS id, {cell4} AS g FROM e),
-        s AS (SELECT id, list(g) AS gs FROM c GROUP BY 1)
-        SELECT a.id AS user_a, b.id AS user_b, ROUND({jac}, 6) AS jaccard
-        FROM s a JOIN s b ON a.id < b.id
-        WHERE ROUND({jac}, 6) >= 0.5
-    """
-
-
-# ---------------------------------------------------------------------------
-# boilerplate profile: corpus-frequent n-gram fraction per document
-# ---------------------------------------------------------------------------
-
-
-def q_doc_boilerplate(spark, sf_dir):
-    """Boilerplate signal for training-data curation: per document, the
-    fraction of its distinct word bigrams that are corpus-common (document
-    frequency >= 5% of docs), histogrammed into 10 buckets. Scale shape: the
-    gram stream shuffles once into the df agg (map-side combinable) and once
-    into the per-doc fraction agg; the df table joins back gram-to-gram —
-    no doc x doc pairs anywhere. The bucket is a single double division in
-    both engines, so parity is exact."""
-    from raptor_service_spark.operators.dedup import distinct_shingle_rows
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    n_docs = F.broadcast(d.agg(F.count(F.lit(1)).alias("n_docs")))
-    dg = distinct_shingle_rows(d, "text", "doc_id", k=2)
-    freq = dg.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    per_doc = (
-        dg.join(freq, "g")
-        .crossJoin(n_docs)
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            # df >= 5% of docs as EXACT integer math (df * 20 >= n_docs):
-            # a float 0.05 * n literal is DECIMAL in DuckDB but double in
-            # Spark and the two can disagree at the boundary.
-            F.sum(
-                (F.col("df") * F.lit(20) >= F.col("n_docs")).cast("long")
-            ).alias("n_common"),
-        )
-    )
-    bucket = F.floor((F.col("n_common") * F.lit(10.0)) / F.col("n")).cast("long")
-    return (
-        per_doc.groupBy(F.least(bucket, F.lit(9)).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.round(F.avg(F.col("n_common") / F.col("n")), 6).alias("avg_frac"),
-        )
-    )
-
-
-def _doc_boilerplate_sql() -> str:
-    from raptor_service_spark.operators.dedup import shingles_sql
-
-    sh = shingles_sql("text", 2)
-    return f"""
-        WITH d AS (SELECT doc_id AS id, {sh} AS sh FROM documents),
-        t AS (SELECT COUNT(*) AS n_docs FROM documents),
-        g AS (SELECT id, UNNEST(sh) AS g FROM d),
-        f AS (SELECT g, COUNT(*) AS df FROM g GROUP BY 1),
-        p AS (SELECT g.id, COUNT(*) AS n,
-                     SUM(CASE WHEN f.df * 20 >= t.n_docs THEN 1 ELSE 0 END) AS n_common
-              FROM g JOIN f USING (g) CROSS JOIN t
-              GROUP BY 1)
-        SELECT LEAST(CAST(FLOOR((n_common * 10.0) / n) AS BIGINT), 9) AS bucket,
-               COUNT(*) AS n_docs,
-               ROUND(AVG(CAST(n_common AS DOUBLE) / n), 6) AS avg_frac
-        FROM p GROUP BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# Z-order (Morton) layout: space-filling-curve bucketing for scan locality
-# ---------------------------------------------------------------------------
-
-
-def _morton_sql(x: str, y: str, bits: int = 8) -> str:
-    """Morton interleave of two < 2**bits ints as pure +/floor/% arithmetic
-    (no bitwise ops), one shared string for Spark F.expr AND DuckDB —
-    parity by construction."""
-    terms = [
-        f"((CAST(FLOOR({x} / {2 ** b}) AS BIGINT) % 2) * {4 ** b} "
-        f"+ (CAST(FLOOR({y} / {2 ** b}) AS BIGINT) % 2) * {2 * 4 ** b})"
-        for b in range(bits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def q_zorder_layout(spark, sf_dir):
-    """Z-order data layout audit (the Delta/Iceberg OPTIMIZE ZORDER analog):
-    docs are Morton-encoded on their res-8 grid (x, y), hashed into 16
-    contiguous z-ranges, and each range reports its (x, y) bounding box —
-    tight boxes are WHY a z-sorted file layout prunes 2-D range scans: a
-    z-range bucket of 4096 codes can only span a 64x64 block. At 100 TB this
-    is the write-side `sortWithinPartitions(z)` recipe; the audit itself is
-    two codegen projections and one agg."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    n = 256
-    x = F.least(
-        F.greatest(F.floor((lng + 180.0) / 360.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    y = F.least(
-        F.greatest(F.floor((lat + 90.0) / 180.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    pts = d.select(x.alias("x"), y.alias("y"))
-    z = F.expr(_morton_sql("x", "y"))
-    return (
-        pts.select("x", "y", F.floor(z / F.lit(4096)).cast("long").alias("zbucket"))
-        .groupBy("zbucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("x").alias("min_x"),
-            F.max("x").alias("max_x"),
-            F.min("y").alias("min_y"),
-            F.max("y").alias("max_y"),
-        )
-    )
-
-
-def _zorder_layout_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    n = 256
-    x = f"LEAST(GREATEST(CAST(FLOOR(({lng} + 180.0) / 360.0 * {n}) AS BIGINT), 0), {n - 1})"
-    y = f"LEAST(GREATEST(CAST(FLOOR(({lat} + 90.0) / 180.0 * {n}) AS BIGINT), 0), {n - 1})"
-    z = _morton_sql("x", "y")
-    return f"""
-        WITH p AS (SELECT {x} AS x, {y} AS y FROM documents)
-        SELECT CAST(FLOOR({z} / 4096) AS BIGINT) AS zbucket,
-               COUNT(*) AS n_docs,
-               MIN(x) AS min_x, MAX(x) AS max_x,
-               MIN(y) AS min_y, MAX(y) AS max_y
-        FROM p GROUP BY 1
-    """
-
-
-def q_hilbert_layout(spark, sf_dir):
-    """Hilbert-curve data layout audit — the locality-superior sibling of
-    `q_zorder_layout` (same res-8 grid, same 4096-code buckets) for the
-    OPTIMIZE-by-curve write recipe. Unlike Morton, EVERY consecutive pair of
-    Hilbert codes is a grid-adjacent cell (verified exhaustively in
-    tests/test_geo.py), so bucket bounding boxes have no seam jumps. The
-    whole encode is one codegen Project (order=8 levels of +,*,floor,%
-    CASE arithmetic, shared verbatim with the DuckDB oracle); the audit is
-    one partial+final agg — zero extra shuffles at 100 TB."""
-    from raptor_service_spark.geo.hilbert import hilbert_withcolumns
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    n = 256
-    x = F.least(
-        F.greatest(F.floor((lng + 180.0) / 360.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    y = F.least(
-        F.greatest(F.floor((lat + 90.0) / 180.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    pts = hilbert_withcolumns(d.select(x.alias("x"), y.alias("y")), 8)
-    return (
-        pts.select("x", "y", F.floor(F.col("hd") / F.lit(4096)).cast("long").alias("hbucket"))
-        .groupBy("hbucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("x").alias("min_x"),
-            F.max("x").alias("max_x"),
-            F.min("y").alias("min_y"),
-            F.max("y").alias("max_y"),
-        )
-    )
-
-
-def _hilbert_layout_sql() -> str:
-    from raptor_service_spark.geo.hilbert import hilbert_sql_chain
-
-    lat, lng = _latlng_sql("doc_id")
-    n = 256
-    x = f"LEAST(GREATEST(CAST(FLOOR(({lng} + 180.0) / 360.0 * {n}) AS BIGINT), 0), {n - 1})"
-    y = f"LEAST(GREATEST(CAST(FLOOR(({lat} + 90.0) / 180.0 * {n}) AS BIGINT), 0), {n - 1})"
-    chain = hilbert_sql_chain(8, f"(SELECT {x} AS x, {y} AS y FROM documents)")
-    return f"""
-        WITH {chain}
-        SELECT CAST(FLOOR(hd / 4096) AS BIGINT) AS hbucket,
-               COUNT(*) AS n_docs,
-               MIN(x) AS min_x, MAX(x) AS max_x,
-               MIN(y) AS min_y, MAX(y) AS max_y
-        FROM h GROUP BY 1
-    """
-
-
-def q_hex_density(spark, sf_dir):
-    """H3-style hexagonal density map: docs are binned into 0.5-degree
-    pointy-top hexes (axial coords via the cube-round walk, `geo/hexgrid.py`
-    — shared arithmetic with the oracle), counted per hex, and the top-20
-    densest hexes report their integer hex-ring distance from the global
-    peak. Scale shape: encode is a codegen Project; the density map is one
-    partial+final agg on (hq, hr); the peak is a 1-row broadcast (the hex
-    table is O(occupied hexes), never O(rows))."""
-    from raptor_service_spark.geo.hexgrid import hex_dist_sql, hex_withcolumns
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(lng.alias("x"), lat.alias("y"))
-    hexes = (
-        hex_withcolumns(pts, 0.5, "x", "y")
-        .groupBy("hq", "hr")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    peak = (
-        hexes.orderBy(F.desc("n_docs"), "hq", "hr")
-        .limit(1)
-        .select(F.col("hq").alias("pq"), F.col("hr").alias("pr"))
-    )
-    dist = hex_dist_sql("hq", "hr", "pq", "pr")
-    return (
-        hexes.join(F.broadcast(peak))
-        .select("hq", "hr", "n_docs", F.expr(dist).alias("ring_from_peak"))
-        .orderBy(F.desc("n_docs"), "hq", "hr")
-        .limit(20)
-    )
-
-
-def _hex_density_sql() -> str:
-    from raptor_service_spark.geo.hexgrid import hex_cte_sql, hex_dist_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    chain = hex_cte_sql(f"(SELECT {lng} AS x, {lat} AS y FROM documents)", 0.5, "x", "y")
-    dist = hex_dist_sql("hq", "hr", "pq", "pr")
-    return f"""
-        WITH {chain},
-        c AS (SELECT hq, hr, COUNT(*) AS n_docs FROM hx GROUP BY 1, 2),
-        p AS (SELECT hq AS pq, hr AS pr FROM c ORDER BY n_docs DESC, hq, hr LIMIT 1)
-        SELECT hq, hr, n_docs, {dist} AS ring_from_peak
-        FROM c CROSS JOIN p
-        ORDER BY n_docs DESC, hq, hr LIMIT 20
-    """
-
-
-def q_geohash_coverage(spark, sf_dir):
-    """Geohash coverage map (ST_GeoHash analog): docs are geohash6-encoded
-    (base32 via pure-arithmetic bit interleave, `geo/geohash.py`, verified
-    char-exact against the canonical subdivision algorithm), then rolled up
-    by their geohash4 prefix — prefix truncation IS spatial containment, so
-    this is the layout/bbox-predicate story in string form. Top-30 prefixes
-    report doc count and distinct-gh6 sub-cell coverage. One codegen Project
-    + one agg (count-distinct expands to the standard two-phase plan)."""
-    from raptor_service_spark.geo.geohash import geohash_withcolumn
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = geohash_withcolumn(
-        d.select(lat.alias("glat"), lng.alias("glng")), "glat", "glng", "gh6", 6
-    )
-    return (
-        pts.groupBy(F.substring("gh6", 1, 4).alias("gh4"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("gh6").alias("n_gh6"),
-        )
-        .orderBy(F.desc("n_docs"), "gh4")
-        .limit(30)
-    )
-
-
-def _geohash_coverage_sql() -> str:
-    from raptor_service_spark.geo.geohash import geohash_cte_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    chain = geohash_cte_sql(
-        f"(SELECT {lat} AS glat, {lng} AS glng FROM documents)",
-        "glat", "glng", "gh6", 6,
-    )
-    return f"""
-        WITH {chain}
-        SELECT SUBSTRING(gh6, 1, 4) AS gh4,
-               COUNT(*) AS n_docs,
-               COUNT(DISTINCT gh6) AS n_gh6
-        FROM gh GROUP BY 1
-        ORDER BY n_docs DESC, gh4 LIMIT 30
-    """
-
-
-def q_kmeans_geo(spark, sf_dir):
-    """Deterministic Lloyd's k-means (k=8, 4 rounds) over doc (lng, lat)
-    points — the iterative-ML dataflow check alongside PageRank. The engine
-    path is the MLlib recipe: O(k) centroids on the driver, each round ONE
-    codegen argmin projection over the points (no join, no point shuffle)
-    + a partial+final agg to k rows; the oracle unrolls the same rounds as
-    CTEs with per-round 9 dp centroid rounding (cross-engine determinism,
-    PageRank precedent). See `operators/clustering.py`."""
-    from raptor_service_spark.operators.clustering import kmeans
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(F.col("doc_id").alias("id"), lng.alias("x"), lat.alias("y"))
-    return kmeans(pts, k=8, n_iters=4)
-
-
-def _kmeans_geo_sql() -> str:
-    from raptor_service_spark.operators.clustering import kmeans_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    src = f"(SELECT doc_id AS id, {lng} AS x, {lat} AS y FROM documents)"
-    return kmeans_sql(src, k=8, n_iters=4)
-
-
-# z-range scan: bbox → minimal Morton ranges → range-join pruning audit
-_ZR_BOX = (99, 177, 135, 206)  # cells of lat [5,55] × lng [-40,70] at n=256
-
-
-def _zr_ranges() -> list[tuple[int, int]]:
-    from raptor_service_spark.geo.zranges import zrange_decompose
-
-    return zrange_decompose(*_ZR_BOX, 8)
-
-
-def q_zrange_scan(spark, sf_dir):
-    """SFC scan pruning in action: a fixed geographic bbox is decomposed
-    into its MINIMAL set of contiguous Morton ranges (driver-side quadtree
-    planner, `geo/zranges.py` — exact-cover property tested exhaustively),
-    and docs are counted per range via `z BETWEEN lo AND hi`. On a
-    z-sorted table each range is a parquet row-group min/max prune — the
-    read amortizes to O(perimeter) range reads instead of a full scan.
-    The planner output is a literal VALUES list shared verbatim with the
-    oracle; the z column uses the same `_morton_sql` arithmetic as the
-    layout audit."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    n = 256
-    x = F.least(
-        F.greatest(F.floor((lng + 180.0) / 360.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    y = F.least(
-        F.greatest(F.floor((lat + 90.0) / 180.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    pts = d.select(x.alias("x"), y.alias("y")).select(
-        F.expr(_morton_sql("x", "y")).alias("z")
-    )
-    ranges = spark.createDataFrame(_zr_ranges(), "z_lo long, z_hi long")
-    return (
-        pts.join(
-            F.broadcast(ranges),
-            (F.col("z") >= F.col("z_lo")) & (F.col("z") <= F.col("z_hi")),
-        )
-        .groupBy("z_lo", "z_hi")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def _zrange_scan_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    n = 256
-    x = f"LEAST(GREATEST(CAST(FLOOR(({lng} + 180.0) / 360.0 * {n}) AS BIGINT), 0), {n - 1})"
-    y = f"LEAST(GREATEST(CAST(FLOOR(({lat} + 90.0) / 180.0 * {n}) AS BIGINT), 0), {n - 1})"
-    z = _morton_sql("x", "y")
-    vals = ", ".join(f"({lo}, {hi})" for lo, hi in _zr_ranges())
-    return f"""
-        WITH p AS (SELECT {x} AS x, {y} AS y FROM documents),
-        pz AS (SELECT {z} AS z FROM p)
-        SELECT r.z_lo, r.z_hi, COUNT(*) AS n_docs
-        FROM pz JOIN (VALUES {vals}) r(z_lo, z_hi)
-          ON pz.z >= r.z_lo AND pz.z <= r.z_hi
-        GROUP BY 1, 2
-    """
-
-
-def _hr_ranges() -> list[tuple[int, int]]:
-    from raptor_service_spark.geo.zranges import hilbert_range_decompose
-
-    return hilbert_range_decompose(*_ZR_BOX, 8)
-
-
-def q_hilbert_range_scan(spark, sf_dir):
-    """Hilbert twin of `zrange_scan` over the SAME bbox: the quad subtree
-    property makes every quad one contiguous hd interval, and Hilbert's
-    no-seam locality yields FEWER, tighter ranges than Morton (asserted in
-    tests) — the practical reason OPTIMIZE-by-Hilbert beats z-order for
-    2-D scans. Same broadcast range-join audit; ranges shared verbatim
-    with the oracle."""
-    from raptor_service_spark.geo.hilbert import hilbert_withcolumns
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    n = 256
-    x = F.least(
-        F.greatest(F.floor((lng + 180.0) / 360.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    y = F.least(
-        F.greatest(F.floor((lat + 90.0) / 180.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    # Cut lineage before the non-equi join: CollapseProject would otherwise
-    # substitute the 8-level rotate-reflect chain INTO the join predicate
-    # (each level doubles the references — exponential expression blowup;
-    # Catalyst spins for minutes). In practice hd is a STORED layout column
-    # (it exists so the table can be written sorted by it), so materializing
-    # it here mirrors the real deployment, not a workaround.
-    pts = (
-        hilbert_withcolumns(d.select(x.alias("x"), y.alias("y")), 8)
-        .select("hd")
-        .localCheckpoint(eager=True)
-    )
-    ranges = spark.createDataFrame(_hr_ranges(), "hd_lo long, hd_hi long")
-    return (
-        pts.join(
-            F.broadcast(ranges),
-            (F.col("hd") >= F.col("hd_lo")) & (F.col("hd") <= F.col("hd_hi")),
-        )
-        .groupBy("hd_lo", "hd_hi")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def _hilbert_range_scan_sql() -> str:
-    from raptor_service_spark.geo.hilbert import hilbert_sql_chain
-
-    lat, lng = _latlng_sql("doc_id")
-    n = 256
-    x = f"LEAST(GREATEST(CAST(FLOOR(({lng} + 180.0) / 360.0 * {n}) AS BIGINT), 0), {n - 1})"
-    y = f"LEAST(GREATEST(CAST(FLOOR(({lat} + 90.0) / 180.0 * {n}) AS BIGINT), 0), {n - 1})"
-    chain = hilbert_sql_chain(8, f"(SELECT {x} AS x, {y} AS y FROM documents)")
-    vals = ", ".join(f"({lo}, {hi})" for lo, hi in _hr_ranges())
-    return f"""
-        WITH {chain}
-        SELECT r.hd_lo, r.hd_hi, COUNT(*) AS n_docs
-        FROM h JOIN (VALUES {vals}) r(hd_lo, hd_hi)
-          ON h.hd >= r.hd_lo AND h.hd <= r.hd_hi
-        GROUP BY 1, 2
-    """
-
-
-# ---------------------------------------------------------------------------
-# movement compass rose: octant histogram of per-user displacement vectors
-# ---------------------------------------------------------------------------
-
-# Octant of a nonzero (dlat, dlng) displacement by EXACT sign/magnitude
-# comparisons — no atan2 (libm results are not bit-guaranteed across
-# engines; comparisons on identical doubles are). Sectors clockwise from
-# north: 0=N..NE(incl 45), 1=NE..E, 2=E..SE(incl 135), 3=SE..S, 4=S..SW
-# (incl 225), 5=SW..W, 6=W..NW(incl 315), 7=NW..N. One shared CASE string
-# for Spark F.expr and DuckDB.
-_OCTANT_SQL = """CASE
-    WHEN dlng >= 0 AND dlat > 0 AND dlat >= dlng THEN 0
-    WHEN dlng > 0 AND dlat > 0 AND dlng > dlat THEN 1
-    WHEN dlng > 0 AND dlat <= 0 AND dlng >= -dlat THEN 2
-    WHEN dlng > 0 AND dlat < 0 AND -dlat > dlng THEN 3
-    WHEN dlng <= 0 AND dlat < 0 AND -dlat >= -dlng THEN 4
-    WHEN dlng < 0 AND dlat < 0 AND -dlng > -dlat THEN 5
-    WHEN dlng < 0 AND dlat >= 0 AND -dlng >= dlat THEN 6
-    ELSE 7 END"""
-
-
-def q_bearing_rose(spark, sf_dir):
-    """Per-user movement-direction histogram: each consecutive event pair is
-    a displacement vector, classified into one of 8 compass octants by exact
-    comparisons (shared CASE string — no libm). Window lag on (user, ts) is
-    the only shuffle; zero-displacement pairs are dropped."""
-    from pyspark.sql import Window
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < 30)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = (
-        pts.withColumn("dlat", F.col("lat") - F.lag("lat").over(w))
-        .withColumn("dlng", F.col("lng") - F.lag("lng").over(w))
-        .filter(
-            F.col("dlat").isNotNull() & ((F.col("dlat") != 0) | (F.col("dlng") != 0))
-        )
-    )
-    return (
-        seg.select("user_id", F.expr(_OCTANT_SQL).cast("long").alias("sector"))
-        .groupBy("user_id", "sector")
-        .agg(F.count(F.lit(1)).alias("n_moves"))
-    )
-
-
-def _bearing_rose_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    return f"""
-        WITH p AS (SELECT user_id, ts, event_id, {lat} AS lat, {lng} AS lng
-                   FROM events WHERE user_id < 30),
-        s AS (SELECT user_id,
-                     lat - LAG(lat) OVER w AS dlat,
-                     lng - LAG(lng) OVER w AS dlng
-              FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        SELECT user_id, CAST(({_OCTANT_SQL}) AS BIGINT) AS sector,
-               COUNT(*) AS n_moves
-        FROM s
-        WHERE dlat IS NOT NULL AND (dlat != 0 OR dlng != 0)
-        GROUP BY 1, 2
-    """
-
-
-# ---------------------------------------------------------------------------
-# co-visitation (association) mining over cells
-# ---------------------------------------------------------------------------
-
-
-def q_cell_covisit(spark, sf_dir):
-    """Market-basket mining over the tile grid: pairs of res-3 cells
-    visited by the same user (support >= 3 users), with lift =
-    n_users_both * n_users_total / (n_users_a * n_users_b), rounded 6 dp —
-    the location co-occurrence signal behind 'people who go here also go
-    there'. Scale shape: the distinct (user, cell) basket table is the only
-    point-derived shuffle; the per-user pair explode is bounded by
-    cells-per-user squared (baskets are small by construction — res-3 has
-    64 cells); per-cell and total supports broadcast back onto the
-    aggregated pair table."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    basket = ev.select(
-        "user_id", cell_encode_col(lat, lng, 3).alias("cell")
-    ).dropDuplicates(["user_id", "cell"])
-    tot = F.broadcast(
-        basket.agg(F.count_distinct("user_id").alias("n_users"))
-    )
-    supp = basket.groupBy("cell").agg(F.count(F.lit(1)).alias("s"))
-    a = basket.select("user_id", F.col("cell").alias("cell_a"))
-    b = basket.select("user_id", F.col("cell").alias("cell_b"))
-    pairs = (
-        a.join(b, "user_id")
-        .filter(F.col("cell_a") < F.col("cell_b"))
-        .groupBy("cell_a", "cell_b")
-        .agg(F.count(F.lit(1)).alias("n_both"))
-        .filter(F.col("n_both") >= 3)
-    )
-    sa = supp.select(F.col("cell").alias("cell_a"), F.col("s").alias("s_a"))
-    sb = supp.select(F.col("cell").alias("cell_b"), F.col("s").alias("s_b"))
-    return (
-        pairs.join(F.broadcast(sa), "cell_a")
-        .join(F.broadcast(sb), "cell_b")
-        .crossJoin(tot)
-        .select(
-            "cell_a",
-            "cell_b",
-            "n_both",
-            F.round(
-                (F.col("n_both") * F.col("n_users")).cast("double")
-                / (F.col("s_a") * F.col("s_b")).cast("double"),
-                6,
-            ).alias("lift"),
-        )
-    )
-
-
-def _cell_covisit_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH basket AS (SELECT DISTINCT user_id, {cell} AS cell FROM events),
-        tot AS (SELECT COUNT(DISTINCT user_id) AS n_users FROM basket),
-        supp AS (SELECT cell, COUNT(*) AS s FROM basket GROUP BY 1),
-        pairs AS (
-            SELECT a.cell AS cell_a, b.cell AS cell_b, COUNT(*) AS n_both
-            FROM basket a JOIN basket b
-              ON a.user_id = b.user_id AND a.cell < b.cell
-            GROUP BY 1, 2 HAVING COUNT(*) >= 3)
-        SELECT p.cell_a, p.cell_b, p.n_both,
-               ROUND(CAST(p.n_both * t.n_users AS DOUBLE)
-                     / CAST(sa.s * sb.s AS DOUBLE), 6) AS lift
-        FROM pairs p
-        JOIN supp sa ON p.cell_a = sa.cell
-        JOIN supp sb ON p.cell_b = sb.cell
-        CROSS JOIN tot t
-    """
-
-
-# ---------------------------------------------------------------------------
-# skyline (Pareto front) + per-stratum percentile-rank normalization
-# ---------------------------------------------------------------------------
-
-
-def q_doc_skyline(spark, sf_dir):
-    """Pareto-front extraction over (quality, token_count): docs no other
-    doc strictly dominates — the multi-objective shortlist a curation
-    pipeline keeps when two metrics cannot be traded off a priori.
-    Domination: q' >= q AND t' >= t AND (q' > q OR t' > t); duplicate
-    (q, t) points are mutually non-dominating and all survive.
-
-    Distributed 2-D skyline WITHOUT the O(n^2) anti-join: per-q max t
-    (partial+final agg), then ONE running-max window over the DISTINCT-q
-    table (bounded by metric cardinality, never the corpus — the same
-    SinglePartition-on-aggregated-rows posture as hot_cells); a doc is on
-    the front iff it carries its q-group's max t and beats every
-    strictly-higher-q group's max. The brute-force NOT EXISTS oracle
-    proves the window formulation."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.functions.text import quality_score, token_count
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    base = d.select(
-        "doc_id",
-        quality_score(F.col("text")).alias("q"),
-        token_count(F.col("text")).cast("long").alias("t"),
-    )
-    gmax = base.groupBy("q").agg(F.max("t").alias("gmax_t"))
-    w = Window.orderBy(F.desc("q")).rowsBetween(Window.unboundedPreceding, -1)
-    front_q = gmax.withColumn("prev_max", F.max("gmax_t").over(w)).filter(
-        F.col("prev_max").isNull() | (F.col("prev_max") < F.col("gmax_t"))
-    )
-    return (
-        base.join(F.broadcast(front_q), "q")
-        .filter(F.col("t") == F.col("gmax_t"))
-        .select("doc_id", "q", "t")
-    )
-
-
-def _doc_skyline_sql() -> str:
-    from raptor_service_spark.functions.text import quality_score_sql, token_count_sql
-
-    q = quality_score_sql("text")
-    t = token_count_sql("text")
-    return f"""
-        WITH b AS (SELECT doc_id, {q} AS q, CAST({t} AS BIGINT) AS t
-                   FROM documents)
-        SELECT doc_id, q, t FROM b a
-        WHERE NOT EXISTS (
-            SELECT 1 FROM b o
-            WHERE o.q >= a.q AND o.t >= a.t AND (o.q > a.q OR o.t > a.t))
-    """
-
-
-def q_doc_quality_percentile(spark, sf_dir):
-    """Per-language percentile-rank normalization of the quality score —
-    the cross-stratum calibration step before global threshold filtering
-    (a 0.6 in one language is not a 0.6 in another). percent_rank ties
-    depend only on the score, so the value is deterministic without a
-    tie-break column; one window per stratum over (lang) partitions."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.functions.text import lang_id, quality_score
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    base = d.select(
-        "doc_id",
-        lang_id(F.col("text")).alias("lang"),
-        quality_score(F.col("text")).alias("q"),
-    )
-    w = Window.partitionBy("lang").orderBy("q")
-    return base.select(
-        "doc_id", "lang", "q", F.round(F.percent_rank().over(w), 6).alias("q_pct")
-    )
-
-
-def _doc_quality_percentile_sql() -> str:
-    from raptor_service_spark.functions.text import lang_id_sql, quality_score_sql
-
-    lang = lang_id_sql("text")
-    q = quality_score_sql("text")
-    return f"""
-        WITH b AS (SELECT doc_id, {lang} AS lang, {q} AS q FROM documents)
-        SELECT doc_id, lang, q,
-               ROUND(PERCENT_RANK() OVER (PARTITION BY lang ORDER BY q), 6)
-                   AS q_pct
-        FROM b
-    """
-
-
-# ---------------------------------------------------------------------------
-# time-series resampling: hourly gap-fill + forward fill; per-cell trend slope
-# ---------------------------------------------------------------------------
-
-
-def q_user_hourly_fill(spark, sf_dir):
-    """Per-user hourly resample with gap-fill and forward fill: a dense
-    hour grid from each user's first to last event hour, event counts per
-    hour (0 on gaps), and the last-known cell carried forward — the
-    trajectory regularization step upstream of any fixed-step model.
-
-    Scale shape: one (user, hour) partial+final agg over events (with the
-    per-hour last-event pick as a max(struct) — no second window over raw
-    events), then a per-user sequence explode bounded by the span in hours
-    and one user-partitioned fill window over the AGGREGATED grid."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < 10)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    pts = ev.select(
-        "user_id",
-        (F.floor(us / F.lit(3_600_000_000)).cast("long")).alias("hr"),
-        F.struct(
-            us.alias("us"),
-            F.col("event_id").alias("eid"),
-            cell_encode_col(lat, lng, 4).alias("cell"),
-        ).alias("pick"),
-    )
-    hourly = pts.groupBy("user_id", "hr").agg(
-        F.count(F.lit(1)).alias("n"), F.max("pick").getField("cell").alias("cell")
-    )
-    spans = hourly.groupBy("user_id").agg(
-        F.min("hr").alias("h0"), F.max("hr").alias("h1")
-    )
-    grid = spans.select(
-        "user_id", F.explode(F.sequence("h0", "h1")).alias("hr")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("hr")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        grid.join(hourly, ["user_id", "hr"], "left")
-        .select(
-            "user_id",
-            "hr",
-            F.coalesce("n", F.lit(0)).alias("n_events"),
-            F.last("cell", ignorenulls=True).over(w).alias("cell_filled"),
-        )
-    )
-
-
-def _user_hourly_fill_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH e AS (SELECT user_id, event_id,
-                          CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) AS hr,
-                          epoch_us(ts) AS us, {cell} AS cell
-                   FROM events WHERE user_id < 10),
-        last_ev AS (
-            SELECT user_id, hr, cell FROM e
-            QUALIFY ROW_NUMBER() OVER (PARTITION BY user_id, hr
-                                       ORDER BY us DESC, event_id DESC) = 1),
-        hourly AS (
-            SELECT c.user_id, c.hr, c.n, l.cell
-            FROM (SELECT user_id, hr, COUNT(*) AS n FROM e GROUP BY 1, 2) c
-            JOIN last_ev l USING (user_id, hr)),
-        spans AS (SELECT user_id, MIN(hr) AS h0, MAX(hr) AS h1
-                  FROM hourly GROUP BY 1),
-        grid AS (SELECT s.user_id, UNNEST(generate_series(s.h0, s.h1)) AS hr
-                 FROM spans s)
-        SELECT g.user_id, g.hr, COALESCE(h.n, 0) AS n_events,
-               last_value(h.cell IGNORE NULLS) OVER (
-                   PARTITION BY g.user_id ORDER BY g.hr
-                   ROWS UNBOUNDED PRECEDING) AS cell_filled
-        FROM grid g LEFT JOIN hourly h USING (user_id, hr)
-    """
-
-
-_TREND_BASE_HR = 473352  # floor(epoch('2024-01-01') / 3600): keeps x tiny/exact
-
-
-def q_cell_trend_slope(spark, sf_dir):
-    """Emerging-hotspot detection: per res-4 cell, the OLS slope of hourly
-    event counts over the hour index. x (hour index) and y (counts) are
-    small integers, so every sum in the closed-form slope is an EXACTLY
-    representable double — cross-engine parity is exact, not rounded.
-    Two partial+final aggs on aggregated rows ((cell,hour) then cell);
-    top-20 by |slope| via TakeOrderedAndProject."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    hc = ev.select(
-        cell_encode_col(lat, lng, 4).alias("cell"),
-        (F.floor(us / F.lit(3_600_000_000)).cast("long") - F.lit(_TREND_BASE_HR)).alias(
-            "x"
-        ),
-    ).groupBy("cell", "x").agg(F.count(F.lit(1)).alias("y"))
-    stats = hc.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_hours"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    slope = (
-        (F.col("n_hours") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-        / (F.col("n_hours") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    )
-    return (
-        stats.filter(F.col("n_hours") >= 2)
-        .select("cell", "n_hours", F.round(slope, 9).alias("slope"))
-        .orderBy(F.desc(F.abs(F.col("slope"))), "cell")
-        .limit(20)
-    )
-
-
-def _cell_trend_slope_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH hc AS (
-            SELECT {cell} AS cell,
-                   CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT)
-                       - {_TREND_BASE_HR} AS x,
-                   COUNT(*) AS y
-            FROM events GROUP BY 1, 2),
-        s AS (
-            SELECT cell, COUNT(*) AS n_hours,
-                   SUM(x) AS sx, SUM(y) AS sy,
-                   SUM(x * y) AS sxy, SUM(x * x) AS sxx
-            FROM hc GROUP BY 1)
-        SELECT cell, CAST(n_hours AS BIGINT) AS n_hours,
-               ROUND(CAST(n_hours * sxy - sx * sy AS DOUBLE)
-                     / CAST(n_hours * sxx - sx * sx AS DOUBLE), 9) AS slope
-        FROM s WHERE n_hours >= 2
-        ORDER BY ABS(ROUND(CAST(n_hours * sxy - sx * sy AS DOUBLE)
-                     / CAST(n_hours * sxx - sx * sx AS DOUBLE), 9)) DESC, cell
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
 # duplicated-substring screen (Lee et al., "Deduplicating Training Data
 # Makes Language Models Better": exact substring dedup via suffix automata;
-# here the scalable windowed-hash form) + Mann-Kendall emerging hotspots
+# here the scalable windowed-hash form)
 # ---------------------------------------------------------------------------
 
 _DUPSUB_WIN, _DUPSUB_STRIDE = 60, 20
@@ -5490,941 +2421,6 @@ def _doc_dup_substrings_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# stratified deterministic sampling + activity bitmask profiling
-# ---------------------------------------------------------------------------
-
-_STRAT_QUOTA = 30
-
-
-def q_doc_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sampling: the first 30 docs per language in
-    md5(doc_id) order — the reproducible per-stratum quota sampler a
-    training-data pipeline uses for balanced eval sets (stable under
-    re-runs, appends, and repartitioning).
-
-    Scale shape: ranking the FULL table in one per-language window is a
-    skew hazard (one reducer per stratum), so the window runs only on
-    survivors of an exact histogram pre-prune: a 256-bucket count per
-    (lang, first-md5-byte) — tiny, map-side combinable — yields the first
-    bucket whose running total covers the quota; only rows at-or-below
-    that bucket (about quota + one bucket width per stratum) reach the
-    window. Bucket order equals md5-string order (fixed-width lowercase
-    hex), so the prune is exact, proven by the QUALIFY oracle over the
-    full table."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.functions.text import lang_id
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    h = F.md5(F.col("doc_id").cast("string"))
-    base = d.select(
-        "doc_id", lang_id(F.col("text")).alias("lang"), h.alias("h")
-    ).withColumn("b", F.conv(F.substring("h", 1, 2), 16, 10).cast("long"))
-    hist = base.groupBy("lang", "b").agg(F.count(F.lit(1)).alias("n"))
-    wcum = (
-        Window.partitionBy("lang")
-        .orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cut = (
-        hist.withColumn("cum", F.sum("n").over(wcum))
-        .filter(F.col("cum") >= _STRAT_QUOTA)
-        .groupBy("lang")
-        .agg(F.min("b").alias("cutoff"))
-    )
-    survivors = base.join(F.broadcast(cut), "lang", "left").filter(
-        F.col("b") <= F.coalesce("cutoff", F.lit(255))
-    )
-    wrk = Window.partitionBy("lang").orderBy("h", "doc_id")
-    return (
-        survivors.withColumn("rk", F.row_number().over(wrk))
-        .filter(F.col("rk") <= _STRAT_QUOTA)
-        .select("doc_id", "lang", F.col("rk").cast("long").alias("rk"))
-    )
-
-
-def _doc_stratified_sample_sql() -> str:
-    from raptor_service_spark.functions.text import lang_id_sql
-
-    lang = lang_id_sql("text")
-    return f"""
-        WITH d AS (SELECT doc_id, {lang} AS lang,
-                          md5(CAST(doc_id AS VARCHAR)) AS h
-                   FROM documents)
-        SELECT doc_id, lang,
-               CAST(ROW_NUMBER() OVER (PARTITION BY lang ORDER BY h, doc_id)
-                    AS BIGINT) AS rk
-        FROM d
-        QUALIFY rk <= {_STRAT_QUOTA}
-    """
-
-
-def q_user_activity_mask(spark, sf_dir):
-    """Per-user hour-of-day activity bitmask (bit h set = any event in hour
-    h) — the compact temporal fingerprint behind bot/shift detection. The
-    mask is SUM(DISTINCT 2^hour): exact integer arithmetic in both engines
-    (POWER is exact for 2^0..2^23), one partial+final distinct agg."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts")
-    hr = F.hour(F.col("ts").cast("timestamp"))
-    bit = F.expr("CAST(POWER(2, hour(CAST(ts AS TIMESTAMP))) AS BIGINT)")
-    return (
-        ev.withColumn("hr", hr)
-        .withColumn("bit", bit)
-        .groupBy("user_id")
-        .agg(
-            F.sum_distinct("bit").alias("hour_mask"),
-            F.count_distinct("hr").alias("n_active_hours"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-
-
-def _user_activity_mask_sql() -> str:
-    return """
-        SELECT user_id,
-               CAST(SUM(DISTINCT CAST(POWER(2, hour(ts)) AS BIGINT)) AS BIGINT)
-                   AS hour_mask,
-               CAST(COUNT(DISTINCT hour(ts)) AS BIGINT) AS n_active_hours,
-               COUNT(*) AS n_events
-        FROM events GROUP BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# spatio-temporal joins: co-location, segment crossings
-# ---------------------------------------------------------------------------
-
-_COLOC_EPS, _COLOC_TAU_US = 15.0, 6 * 3600 * 1_000_000
-_XING_SPAN, _XING_RES = 30.0, 3
-
-
-def q_user_colocation(spark, sf_dir):
-    """Co-location (contact) join: event pairs of different users within 15
-    degrees AND 6 hours of each other, counted per user pair. ONE composite
-    (cell, time-bucket) equi-join — the right side rings out 3x3 cells x 3
-    buckets so each pair is found exactly once; refine is shared codegen
-    arithmetic. The exhaustive-oracle equality proves the candidacy cover."""
-    from raptor_service_spark.operators.spatiotemporal import colocation_pairs
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < 40)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    return colocation_pairs(pts, eps=_COLOC_EPS, tau_us=_COLOC_TAU_US)
-
-
-def _user_colocation_sql() -> str:
-    from raptor_service_spark.operators.spatiotemporal import colocation_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return colocation_sql(
-        "(SELECT * FROM events WHERE user_id < 40) ev",
-        eps=_COLOC_EPS,
-        tau_us=_COLOC_TAU_US,
-        lat_expr=lat,
-        lng_expr=lng,
-    )
-
-
-_COTRAVEL_RES, _COTRAVEL_MIN_RUN = 3, 2
-
-
-def q_cotravel_pairs(spark, sf_dir):
-    """Co-TRAVEL detection (the sequential upgrade of the co-location
-    contact join): user pairs that share a (res-3 cell, day) bucket on
-    >= 2 CONSECUTIVE days — traveling TOGETHER, not merely meeting once.
-    The trajectory-privacy / convoy-mining primitive (Jeung et al. convoy
-    queries): presence buckets per user (DISTINCT — multiple pings in one
-    bucket collapse), one (cell, day) self-join for shared days, then
-    gaps-and-islands over each pair's shared-day sequence for the longest
-    consecutive run. Output: pairs with max_run >= 2, their longest run
-    and total shared days.
-
-    Scale shape at 100 TB: points collapse to presence buckets FIRST (the
-    only point-row shuffle); the self-join fans out per (cell, hour)
-    bucket occupancy (the co-location candidate bound — hot buckets are
-    the quantity being reported); runs are ONE pair-keyed window over the
-    shared-hour rows. All-integer output — exact parity."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < 150)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86_400_000_000)
-    ).cast("long")
-    pres = (
-        ev.select(
-            "user_id",
-            cell_encode_col(lat, lng, _COTRAVEL_RES).alias("cell"),
-            day.alias("hr"),
-        )
-        .distinct()
-    )
-    a, b = pres.alias("a"), pres.alias("b")
-    shared = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.hr") == F.col("b.hr"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
-        .select(
-            F.col("a.user_id").alias("ua"),
-            F.col("b.user_id").alias("ub"),
-            F.col("a.hr").alias("hr"),
-        )
-        .distinct()  # two shared cells in one hour count once
-    )
-    w = Window.partitionBy("ua", "ub").orderBy("hr")
-    runs = (
-        shared.withColumn(
-            "brk", (F.col("hr") - F.lag("hr").over(w) > 1).cast("int")
-        )
-        .withColumn("run_id", F.sum(F.coalesce("brk", F.lit(0))).over(w))
-        .groupBy("ua", "ub", "run_id")
-        .agg(F.count(F.lit(1)).alias("run_len"))
-    )
-    return (
-        runs.groupBy("ua", "ub")
-        .agg(
-            F.max("run_len").alias("max_run"),
-            F.sum("run_len").alias("shared_days"),
-        )
-        .filter(F.col("max_run") >= _COTRAVEL_MIN_RUN)
-        .select(
-            F.col("ua").alias("user_a"),
-            F.col("ub").alias("user_b"),
-            "max_run",
-            F.col("shared_days").cast("long").alias("shared_days"),
-        )
-        .orderBy("user_a", "user_b")
-    )
-
-
-def _cotravel_pairs_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _COTRAVEL_RES)
-    return f"""
-        WITH pres AS (
-            SELECT DISTINCT user_id, {cell} AS cell,
-                   CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS hr
-            FROM events WHERE user_id < 150),
-        shared AS (
-            SELECT DISTINCT a.user_id AS ua, b.user_id AS ub, a.hr
-            FROM pres a JOIN pres b
-              ON a.cell = b.cell AND a.hr = b.hr AND a.user_id < b.user_id),
-        flagged AS (
-            SELECT ua, ub, hr,
-                   CASE WHEN hr - LAG(hr) OVER (PARTITION BY ua, ub
-                        ORDER BY hr) > 1 THEN 1 ELSE 0 END AS brk
-            FROM shared),
-        runs AS (
-            SELECT ua, ub,
-                   SUM(brk) OVER (PARTITION BY ua, ub ORDER BY hr) AS run_id
-            FROM flagged),
-        per_run AS (
-            SELECT ua, ub, run_id, COUNT(*) AS run_len
-            FROM runs GROUP BY 1, 2, 3)
-        SELECT ua AS user_a, ub AS user_b,
-               CAST(MAX(run_len) AS BIGINT) AS max_run,
-               CAST(SUM(run_len) AS BIGINT) AS shared_days
-        FROM per_run GROUP BY 1, 2
-        HAVING MAX(run_len) >= {_COTRAVEL_MIN_RUN}
-        ORDER BY 1, 2
-    """
-
-
-_REACH_SEED_USER, _REACH_ROUNDS = 0, 12
-
-
-def q_contact_reach(spark, sf_dir):
-    """Temporal (time-respecting) reachability over the co-location contact
-    graph — the contact-tracing / influence-spread primitive: user 0 is
-    'exposed' at their first active day; exposure propagates along contact
-    edges (ua, ub, day) only FORWARD in time (a contact infects only if it
-    happens at-or-after the carrier's own exposure day), and each user
-    records their EARLIEST possible exposure day. Classic temporal-graph
-    semantics (Holme & Saramäki) — a plain transitive closure would
-    overcount by ignoring edge ordering.
-
-    Spark: min-day frontier iteration (the dedup_components dataflow) —
-    each round one join of the O(users) exposure table against the
-    aggregated contact-edge table + a min-agg; rounds bounded by the
-    temporal diameter (≤ days in corpus); localCheckpoint per round.
-    Oracle: DuckDB recursive CTE over (user, day) states with the same
-    day-ordering predicate, MIN per user. All-integer output."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86_400_000_000)
-    ).cast("long")
-    pres = ev.select(
-        "user_id",
-        cell_encode_col(lat, lng, 3).alias("cell"),
-        day.alias("day"),
-    ).distinct()
-    a, b = pres.alias("a"), pres.alias("b")
-    # One row per DIRECTED contact pair with its sorted day list: the
-    # per-(ua,ub) collect_set replaces the edge-day distinct (one shuffle,
-    # not two) and shrinks every propagation round's join from
-    # O(edge-days) to O(pairs) — each round then picks the earliest
-    # applicable day array-side instead of re-scanning all day copies.
-    contacts = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.day") == F.col("b.day"))
-            & (F.col("a.user_id") != F.col("b.user_id")),
-        )
-        .select(
-            F.col("a.user_id").alias("ua"),
-            F.col("b.user_id").alias("ub"),
-            F.col("a.day").alias("day"),
-        )
-        .groupBy("ua", "ub")
-        .agg(F.sort_array(F.collect_set("day")).alias("days"))
-        .localCheckpoint(eager=True)
-    )
-    seed_day = (
-        pres.filter(F.col("user_id") == _REACH_SEED_USER)
-        .agg(F.min("day"))
-        .collect()[0][0]
-    )
-    inf = spark.createDataFrame(
-        [(_REACH_SEED_USER, int(seed_day))], "user_id long, day_exposed long"
-    ).localCheckpoint(eager=True)
-    prev_sig = None
-    for _ in range(_REACH_ROUNDS):
-        spread = (
-            inf.join(contacts, inf.user_id == contacts.ua)
-            .select(
-                F.col("ub").alias("user_id"),
-                # earliest contact day at-or-after the carrier's exposure
-                F.array_min(
-                    F.filter("days", lambda d: d >= F.col("day_exposed"))
-                ).alias("day_exposed"),
-            )
-            .filter(F.col("day_exposed").isNotNull())
-        )
-        new_inf = (
-            inf.unionByName(spread)
-            .groupBy("user_id")
-            .agg(F.min("day_exposed").alias("day_exposed"))
-            .localCheckpoint(eager=True)
-        )
-        # monotone iteration (users only added, days only decrease), so the
-        # fixpoint test is ONE agg: unchanged (count, sum(day))
-        sig = tuple(
-            new_inf.agg(
-                F.count(F.lit(1)), F.sum("day_exposed")
-            ).collect()[0]
-        )
-        inf = new_inf
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    return inf.orderBy("user_id")
-
-
-def _contact_reach_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH RECURSIVE pres AS (
-            SELECT DISTINCT user_id, {cell} AS cell,
-                   CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS day
-            FROM events),
-        contacts AS (
-            SELECT DISTINCT a.user_id AS ua, b.user_id AS ub, a.day
-            FROM pres a JOIN pres b
-              ON a.cell = b.cell AND a.day = b.day
-             AND a.user_id != b.user_id),
-        seed AS (SELECT {_REACH_SEED_USER} AS user_id, MIN(day) AS day
-                 FROM pres WHERE user_id = {_REACH_SEED_USER}),
-        states(user_id, day) AS (
-            SELECT user_id, day FROM seed
-            UNION
-            SELECT c.ub, c.day
-            FROM states s JOIN contacts c
-              ON c.ua = s.user_id AND c.day >= s.day)
-        SELECT user_id, CAST(MIN(day) AS BIGINT) AS day_exposed
-        FROM states GROUP BY 1 ORDER BY 1
-    """
-
-
-def q_traj_crossings(spark, sf_dir):
-    """Trajectory-crossing join: per user pair, how many of their movement
-    segments physically intersect (closed semantics). Cover-cell candidates
-    + reference-point dedup (pair emitted only in its intersection bbox's
-    corner cell — no distinct shuffle); the exact test is the shared CLRS
-    straddle arithmetic. Teleport segments (> 30 deg span) are dropped to
-    bound the cover factor."""
-    from raptor_service_spark.operators.spatiotemporal import (
-        segment_crossings,
-        user_segments,
-    )
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < 25)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    segs = user_segments(pts, max_span=_XING_SPAN)
-    return segment_crossings(segs, res=_XING_RES)
-
-
-def _traj_crossings_sql() -> str:
-    from raptor_service_spark.operators.spatiotemporal import segment_crossings_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return segment_crossings_sql(
-        "(SELECT * FROM events WHERE user_id < 25) ev",
-        max_span=_XING_SPAN,
-        lat_expr=lat,
-        lng_expr=lng,
-    )
-
-
-_SNAP_SPAN, _SNAP_DIST, _SNAP_RES = 30.0, 5.0, 4
-
-
-def q_snap_points(spark, sf_dir):
-    """Map-matching primitive: snap each ping of one user cohort (user_id %
-    5 == 1) to the nearest trajectory segment of another (user_id % 5 == 3)
-    within 5 degrees — clamped point-to-line projection as ONE shared
-    arithmetic string. Candidates via max_dist-expanded cover cells (each
-    point has one cell, so pairs never duplicate and the per-point argmin
-    is a plain struct-min agg); the exhaustive-join oracle proves the
-    candidacy complete. See `operators/spatiotemporal.py`."""
-    from raptor_service_spark.operators.spatiotemporal import (
-        snap_to_segments,
-        user_segments,
-    )
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    roads = ev.filter(F.col("user_id") % 5 == 3).withColumn("lat", lat).withColumn("lng", lng)
-    segs = user_segments(roads, max_span=_SNAP_SPAN)
-    pts = (
-        ev.filter(F.col("user_id") % 5 == 1)
-        .select(F.col("event_id").alias("pid"), lng.alias("px"), lat.alias("py"))
-    )
-    return snap_to_segments(pts, segs, res=_SNAP_RES, max_dist=_SNAP_DIST)
-
-
-def _snap_points_sql() -> str:
-    from raptor_service_spark.operators.spatiotemporal import snap_to_segments_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return snap_to_segments_sql(
-        points_sql=f"(SELECT event_id AS pid, {lng} AS px, {lat} AS py "
-        "FROM events WHERE user_id % 5 = 1)",
-        events_sql="(SELECT * FROM events WHERE user_id % 5 = 3) ev",
-        max_span=_SNAP_SPAN,
-        max_dist=_SNAP_DIST,
-        lat_expr=lat,
-        lng_expr=lng,
-    )
-
-
-_VIT_L, _VIT_K, _VIT_EPS, _VIT_COHORT = 6, 3, 25.0, 40
-
-
-def q_viterbi_match(spark, sf_dir):
-    """HMM map-matching (Newson & Krumm 2009, the hidden-Markov matcher
-    behind every map-matching service): each user's trajectory, resampled
-    to L=6 fixes (the dtw_pairs rank arithmetic), is matched to the
-    document 'road node' set — candidate states per fix are the K=3
-    nearest nodes within ε (ring-join, never fix × node), emission cost =
-    fix→node distance, transition cost = |node-to-node distance −
-    fix-step distance| (the Newson-Krumm route/great-circle discrepancy in
-    its straight-line form). The Viterbi DP unrolls over the L fixed steps
-    as relational min-aggregations — the kmeans_geo/dtw unroll technique —
-    so the whole matcher is value-checked against an unrolled-CTE DuckDB
-    twin whose candidate stage is the EXHAUSTIVE join (proving the ring
-    candidacy complete). Output: per user the matched end node + total
-    path cost.
-
-    Scale shape at 100 TB: one user-window resample (points touched once),
-    one ε ring-join for candidates, then L−1 rounds of join+min-agg on the
-    O(users × K) DP table. All users advance in parallel; no per-user
-    driver work, no UDF. Float convention: costs rounded 9 dp per step
-    (min is order-free), 6 dp at the output."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    L, K = _VIT_L, _VIT_K
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < _VIT_COHORT)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ranked = ev.select(
-        F.col("user_id").alias("uid"),
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n"),
-        lat.alias("lat"),
-        lng.alias("lng"),
-    )
-    fixes = (
-        ranked.select(
-            "uid", "rn", "n", "lat", "lng",
-            F.explode(F.sequence(F.lit(0), F.lit(L - 1))).alias("i"),
-        )
-        .filter(F.col("rn") == F.floor(F.col("i") * F.col("n") / L) + 1)
-        .select("uid", "i", "lat", "lng")
-    )
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    nlat, nlng = _latlng_cols(F.col("doc_id"))
-    nodes = d.select(
-        F.col("doc_id").alias("nid"), nlat.alias("lat"), nlng.alias("lng")
-    )
-    call = within_distance_join(fixes, nodes, eps=_VIT_EPS).select(
-        F.col("l.uid").alias("uid"),
-        F.col("l.i").alias("i"),
-        F.col("r.nid").alias("nid"),
-        F.col("r.lng").alias("nx"),
-        F.col("r.lat").alias("ny"),
-        F.col("dist").alias("e"),
-    )
-    wk = Window.partitionBy("uid", "i").orderBy(F.col("e").asc(), F.col("nid").asc())
-    cand = (
-        call.withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= K)
-        .drop("rk")
-    )
-    ok = (
-        cand.groupBy("uid")
-        .agg(F.countDistinct("i").alias("ni"))
-        .filter(F.col("ni") == L)
-        .select("uid")
-    )
-    # O(users × L × K) rows; materialized once, read back L+1 times by the
-    # per-step filters below
-    cand = cand.join(F.broadcast(ok), "uid").localCheckpoint(eager=True)
-
-    wf = Window.partitionBy("uid").orderBy("i")
-    dx = F.col("lng") - F.col("px")
-    dy = F.col("lat") - F.col("py")
-    gd = (
-        fixes.withColumn("px", F.lag("lng").over(wf))
-        .withColumn("py", F.lag("lat").over(wf))
-        .filter(F.col("px").isNotNull())
-        .select(
-            "uid",
-            F.col("i").alias("t"),
-            F.round(F.sqrt(dx * dx + dy * dy), 9).alias("gd"),
-        )
-    )
-
-    dp = cand.filter(F.col("i") == 0).select(
-        "uid", "nid", "nx", "ny", F.round(F.col("e"), 9).alias("cost")
-    )
-    for t in range(1, L):
-        ct = cand.filter(F.col("i") == t).select(
-            "uid",
-            F.col("nid").alias("cnid"),
-            F.col("nx").alias("cnx"),
-            F.col("ny").alias("cny"),
-            F.col("e").alias("ce"),
-        )
-        g = gd.filter(F.col("t") == t).select("uid", "gd")
-        tdx = F.col("nx") - F.col("cnx")
-        tdy = F.col("ny") - F.col("cny")
-        trans = F.round(F.abs(F.sqrt(tdx * tdx + tdy * tdy) - F.col("gd")), 9)
-        step = (
-            dp.join(ct, "uid")
-            .join(g, "uid")
-            .select("uid", "cnid", "cnx", "cny", "ce", (F.col("cost") + trans).alias("tc"))
-        )
-        dp = (
-            step.groupBy("uid", "cnid", "cnx", "cny", "ce")
-            .agg(F.round(F.min("tc"), 9).alias("mc"))
-            .select(
-                "uid",
-                F.col("cnid").alias("nid"),
-                F.col("cnx").alias("nx"),
-                F.col("cny").alias("ny"),
-                F.round(F.col("mc") + F.col("ce"), 9).alias("cost"),
-            )
-        )
-    best = dp.groupBy("uid").agg(
-        F.min(
-            F.struct(F.round(F.col("cost"), 6).alias("c"), F.col("nid").alias("nid"))
-        ).alias("b")
-    )
-    return best.select(
-        F.col("uid").alias("user_id"),
-        F.col("b.nid").alias("end_node"),
-        F.col("b.c").alias("match_cost"),
-    ).orderBy("user_id")
-
-
-def _viterbi_match_sql() -> str:
-    L, K, eps = _VIT_L, _VIT_K, _VIT_EPS
-    lat, lng = _latlng_sql("event_id")
-    nlat, nlng = _latlng_sql("doc_id")
-    edist = "SQRT((f.x - n.nx) * (f.x - n.nx) + (f.y - n.ny) * (f.y - n.ny))"
-    dps = []
-    for t in range(1, L):
-        dps.append(f"""dp{t} AS (
-            SELECT uid, cnid AS nid, cnx AS nx, cny AS ny,
-                   ROUND(mc + ce, 9) AS cost
-            FROM (
-                SELECT c.uid, c.nid AS cnid, c.nx AS cnx, c.ny AS cny,
-                       c.e AS ce,
-                       ROUND(MIN(p.cost
-                             + ROUND(ABS(SQRT((p.nx - c.nx) * (p.nx - c.nx)
-                                            + (p.ny - c.ny) * (p.ny - c.ny))
-                                         - g.gd), 9)), 9) AS mc
-                FROM dp{t - 1} p
-                JOIN c ON c.uid = p.uid AND c.i = {t}
-                JOIN gd g ON g.uid = p.uid AND g.t = {t}
-                GROUP BY c.uid, c.nid, c.nx, c.ny, c.e))""")
-    chain = ",\n        ".join(dps)
-    return f"""
-        WITH p AS (SELECT user_id AS uid, ts, event_id,
-                          {lng} AS x, {lat} AS y
-                   FROM events WHERE user_id < {_VIT_COHORT}),
-        r AS (SELECT uid, x, y,
-                     ROW_NUMBER() OVER (PARTITION BY uid
-                                        ORDER BY ts, event_id) AS rn,
-                     COUNT(*) OVER (PARTITION BY uid) AS n
-              FROM p),
-        fx AS (SELECT r.uid, v.i, r.x, r.y
-               FROM r JOIN (SELECT UNNEST(RANGE({L})) AS i) v
-                 ON r.rn = CAST(FLOOR(v.i * r.n / {L}) AS BIGINT) + 1),
-        nodes AS (SELECT doc_id AS nid, {nlng} AS nx, {nlat} AS ny
-                  FROM documents),
-        call AS (
-            SELECT f.uid, f.i, n.nid, n.nx, n.ny, ROUND({edist}, 6) AS e
-            FROM fx f JOIN nodes n ON ROUND({edist}, 6) <= {eps!r}),
-        cand AS (
-            SELECT uid, i, nid, nx, ny, e FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY uid, i
-                                             ORDER BY e, nid) AS rk
-                FROM call) WHERE rk <= {K}),
-        ok AS (SELECT uid FROM cand GROUP BY uid
-               HAVING COUNT(DISTINCT i) = {L}),
-        c AS MATERIALIZED (SELECT cand.* FROM cand JOIN ok USING (uid)),
-        gd AS MATERIALIZED (
-            SELECT uid, i AS t,
-                   ROUND(SQRT((x - px) * (x - px) + (y - py) * (y - py)), 9)
-                       AS gd
-            FROM (SELECT uid, i, x, y,
-                         LAG(x) OVER (PARTITION BY uid ORDER BY i) AS px,
-                         LAG(y) OVER (PARTITION BY uid ORDER BY i) AS py
-                  FROM fx) WHERE px IS NOT NULL),
-        dp0 AS (SELECT uid, nid, nx, ny, ROUND(e, 9) AS cost
-                FROM c WHERE i = 0),
-        {chain}
-        SELECT uid AS user_id, nid AS end_node, ROUND(cost, 6) AS match_cost
-        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY uid
-                        ORDER BY ROUND(cost, 6), nid) AS rk
-              FROM dp{L - 1})
-        WHERE rk = 1
-        ORDER BY user_id
-    """
-
-
-_DTW_L, _DTW_COHORT = 8, 30
-
-
-def q_dtw_pairs(spark, sf_dir):
-    """DTW trajectory similarity for a 30-user cohort, resampled to 8
-    points — the L×L dynamic program unrolled anti-diagonal by
-    anti-diagonal into flat codegen Projects (NO UDF, no Python; the same
-    cell formulas run as a CTE chain in the oracle, so floats are
-    bit-identical by construction). All-pairs is inherently quadratic:
-    callers bound the cohort or block first. See `operators/dtw.py`."""
-    from raptor_service_spark.operators.dtw import dtw_pairs, resample_traj
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < _DTW_COHORT)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    return dtw_pairs(resample_traj(pts, _DTW_L), _DTW_L)
-
-
-def _dtw_pairs_sql() -> str:
-    from raptor_service_spark.operators.dtw import dtw_pairs_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return dtw_pairs_sql(
-        f"(SELECT * FROM events WHERE user_id < {_DTW_COHORT}) ev",
-        _DTW_L,
-        lat_expr=lat,
-        lng_expr=lng,
-    )
-
-
-def q_hausdorff_pairs(spark, sf_dir):
-    """Symmetric Hausdorff distance (squared, 6 dp) for the same 30-user
-    cohort as `dtw_pairs` — the set-to-set bottleneck metric (no path
-    monotonicity). The metric is ONE nested higher-order-function
-    projection (transform → array_min → array_max), fully codegen: no
-    explode, no UDF, no extra rows. See `operators/dtw.py`."""
-    from raptor_service_spark.operators.dtw import hausdorff_pairs, resample_traj
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < _DTW_COHORT)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    return hausdorff_pairs(resample_traj(pts, _DTW_L), _DTW_L)
-
-
-def _hausdorff_pairs_sql() -> str:
-    from raptor_service_spark.operators.dtw import hausdorff_pairs_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return hausdorff_pairs_sql(
-        f"(SELECT * FROM events WHERE user_id < {_DTW_COHORT}) ev",
-        _DTW_L,
-        lat_expr=lat,
-        lng_expr=lng,
-    )
-
-
-# ---------------------------------------------------------------------------
-# cell-graph algorithms: BFS isochrone, PageRank (operators/cell_graph.py)
-# ---------------------------------------------------------------------------
-
-_ISO_RES, _ISO_HOPS = 5, 6
-
-
-def _iso_seed_cell() -> int:
-    """Cell of doc_id=1's synthetic position — identical constant for both
-    engines (Python replica of _latlng_cols + the numpy grid encoder)."""
-    from raptor_service_spark.geo.grid import cell_encode_np
-
-    h = (1 * _HM) % _HMOD
-    lat = (h % 1700) / 10.0 - 85.0 + 0.05
-    lng = ((h // 1700) % 3580) / 10.0 - 179.0 + 0.05
-    return int(cell_encode_np([lat], [lng], _ISO_RES)[0])
-
-
-def q_cell_isochrone(spark, sf_dir):
-    """BFS hop-distance rings (isochrone) from doc 1's cell over the
-    occupied res-5 document cells, 8-adjacency, <= 6 hops. Iterative
-    frontier expansion — one equi-join + anti-join per round over the
-    O(occupied cells) table; the recursive-CTE oracle proves the loop."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.cell_graph import bfs_hops
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = d.select(cell_encode_col(lat, lng, _ISO_RES).alias("cell"))
-    return bfs_hops(occ, _iso_seed_cell(), res=_ISO_RES, max_hops=_ISO_HOPS)
-
-
-def _cell_isochrone_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import bfs_hops_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _ISO_RES)
-    return bfs_hops_sql(
-        f"SELECT {cell} AS cell FROM documents",
-        _iso_seed_cell(),
-        res=_ISO_RES,
-        max_hops=_ISO_HOPS,
-    )
-
-
-def q_cell_sssp(spark, sf_dir):
-    """Weighted shortest path (Bellman-Ford, 8 fixed rounds) from doc 1's
-    cell over occupied res-5 document cells: entering a cell costs
-    1 + its doc count — an integer congestion cost, so distances are EXACT
-    across engines (no float protocol). Per round: one join of the
-    O(reached) dist table into the edge list + one min-agg; the oracle
-    unrolls the same rounds as CTEs. See `operators/cell_graph.py`."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.cell_graph import sssp
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ_w = (
-        d.select(cell_encode_col(lat, lng, _ISO_RES).alias("cell"))
-        .groupBy("cell")
-        .agg((F.lit(1) + F.count(F.lit(1))).alias("w"))
-    )
-    return sssp(occ_w, _iso_seed_cell(), res=_ISO_RES, n_rounds=8)
-
-
-def _cell_sssp_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import sssp_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _ISO_RES)
-    return sssp_sql(
-        f"SELECT {cell} AS cell, 1 + COUNT(*) AS w FROM documents GROUP BY 1",
-        _iso_seed_cell(),
-        res=_ISO_RES,
-        n_rounds=8,
-    )
-
-
-def q_cell_pagerank(spark, sf_dir):
-    """PageRank over the res-3 OD cell-transition graph (edge weight =
-    transition count): which tiles do trajectories flow INTO. Fixed 5
-    damped iterations, per-iteration 9-dp rounding for cross-engine
-    determinism; the oracle unrolls the identical iterations as a CTE
-    chain. Points are touched once (the OD window + count); every
-    iteration joins/aggregates the O(cells) tables only."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.cell_graph import pagerank
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell")))
-        .groupBy(F.col("prev_cell").alias("src"), F.col("cell").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-    )
-    return pagerank(edges, n_iters=5, damping=0.85)
-
-
-def _cell_pagerank_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import pagerank_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    edges = f"""
-        SELECT prev_cell AS src, cell AS dst, CAST(COUNT(*) AS DOUBLE) AS w
-        FROM (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id) AS prev_cell
-              FROM (SELECT user_id, ts, event_id, {cell} AS cell FROM events))
-        WHERE prev_cell IS NOT NULL AND prev_cell != cell
-        GROUP BY 1, 2
-    """
-    return pagerank_sql(edges, n_iters=5, damping=0.85)
-
-
-# ---------------------------------------------------------------------------
-# sorted-neighborhood dedup (the record-linkage classic, 6th dedup family)
-# ---------------------------------------------------------------------------
-
-
-def q_snm_pairs(spark, sf_dir):
-    """Blocked sorted-neighborhood near-dup join over the duplicated corpus:
-    sort by normalized text key per block, compare each record with its 3
-    successors only (O(n·w) candidates — no hashing, no inverted index),
-    exact word-set Jaccard >= 0.6 verify. Twin docs have identical keys, so
-    they are adjacent and surface at jaccard 1.0
-    (operators/dedup.py:snm_pairs scale + miss-model notes)."""
-    from raptor_service_spark.operators.dedup import snm_pairs
-
-    return snm_pairs(_docs_with_dups(spark, sf_dir), window=3, threshold=0.6)
-
-
-def _snm_pairs_sql() -> str:
-    from raptor_service_spark.operators.dedup import snm_pairs_sql
-
-    return snm_pairs_sql(_DOCS_WITH_DUPS_SQL, window=3, threshold=0.6)
-
-
-# ---------------------------------------------------------------------------
-# triangle counting on the OD cell graph (mobility-graph cohesion)
-# ---------------------------------------------------------------------------
-
-
-def q_od_triangles(spark, sf_dir):
-    """Per-cell triangle participation on the undirected OD graph: distinct
-    movement edges → oriented (a < b) edge list → the standard two-join
-    triangle enumeration (each triangle found exactly once as a < b < c) →
-    per-node counts. The classic graph-cohesion statistic over the same
-    mobility edges as cell_pagerank. Scale shape: event rows cross ONE
-    window shuffle into the edge agg; triangle joins run on the O(occupied
-    cells²)-bounded DISTINCT edge table — never on raw events; the a < b < c
-    orientation makes dedup free."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    moves = pts.withColumn("prev_cell", F.lag("cell").over(w)).filter(
-        F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell"))
-    )
-    edges = (
-        moves.select(
-            F.least("prev_cell", "cell").alias("a"),
-            F.greatest("prev_cell", "cell").alias("b"),
-        )
-        .distinct()
-    )
-    e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tri = (
-        e1.join(e2, (F.col("e1.b") == F.col("e2.a")))
-        .join(
-            e3,
-            (F.col("e1.a") == F.col("e3.a")) & (F.col("e2.b") == F.col("e3.b")),
-        )
-        .select(
-            F.col("e1.a").alias("x"), F.col("e1.b").alias("y"), F.col("e2.b").alias("z")
-        )
-    )
-    return (
-        tri.select(F.explode(F.array("x", "y", "z")).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-        .orderBy("cell")
-    )
-
-
-def _od_triangles_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH pts AS (SELECT user_id, ts, event_id, {cell} AS cell FROM events),
-        mv AS (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id) AS prev_cell
-               FROM pts),
-        edges AS (SELECT DISTINCT LEAST(prev_cell, cell) AS a,
-                                  GREATEST(prev_cell, cell) AS b
-                  FROM mv WHERE prev_cell IS NOT NULL AND prev_cell != cell),
-        tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-                FROM edges e1
-                JOIN edges e2 ON e1.b = e2.a
-                JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b)
-        SELECT cell, COUNT(*) AS n_triangles
-        FROM (SELECT x AS cell FROM tri
-              UNION ALL SELECT y FROM tri
-              UNION ALL SELECT z FROM tri)
-        GROUP BY cell
-        ORDER BY cell
-    """
-
-
-# ---------------------------------------------------------------------------
 # MMR diversification re-rank (diversity-aware retrieval, grouped kernel)
 # ---------------------------------------------------------------------------
 
@@ -6520,32 +2516,6 @@ def _mmr_retrieval_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# LISA: local Moran's I cluster/outlier map
-# ---------------------------------------------------------------------------
-
-
-def q_local_moran(spark, sf_dir):
-    """Anselin local Moran's I per occupied res-5 cell with HH/LL/HL/LH
-    quadrant labels — the per-cell decomposition of the global morans_i
-    query: where the hot clusters, cold clusters, and spatial outliers sit.
-    Same one-point-shuffle + O(cells) ring-join shape as morans_i."""
-    from raptor_service_spark.operators.spatial_stats import local_morans_i
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    return local_morans_i(
-        d.withColumn("lat", lat).withColumn("lng", lng), res=5
-    )
-
-
-def _local_moran_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import local_morans_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    return local_morans_sql("documents", lat, lng, res=5)
-
-
-# ---------------------------------------------------------------------------
 # unigram-LM perplexity quality filter (the rare-word outlier detector)
 # ---------------------------------------------------------------------------
 
@@ -6589,75 +2559,6 @@ def _doc_perplexity_sql() -> str:
         GROUP BY doc_id
         ORDER BY nll DESC, doc_id
         LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# trajectory simplification: one-pass Visvalingam-Whyatt area filter
-# ---------------------------------------------------------------------------
-
-_VW_TAU = 25.0  # degree² effective-area threshold
-
-
-def q_trajectory_simplify(spark, sf_dir):
-    """Per-user trajectory simplification summary: one-pass Visvalingam-
-    Whyatt — each interior point's effective triangle area against its
-    ordered neighbors (lag/lead), dropped when below τ; endpoints always
-    survive. Output per user: point count, kept count, 6-dp compression
-    ratio. ONE window shuffle (partitionBy user, orderBy ts); the area is
-    a codegen cross product — no Python, no self-join. The iterative VW
-    refinement would re-run this pass; a single pass is the standard
-    streaming variant."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        "user_id", "ts", "event_id", lat.alias("lat"), lng.alias("lng")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    p = (
-        pts.withColumn("lat0", F.lag("lat").over(w))
-        .withColumn("lng0", F.lag("lng").over(w))
-        .withColumn("lat2", F.lead("lat").over(w))
-        .withColumn("lng2", F.lead("lng").over(w))
-    )
-    area = F.abs(
-        (F.col("lat") - F.col("lat0")) * (F.col("lng2") - F.col("lng0"))
-        - (F.col("lat2") - F.col("lat0")) * (F.col("lng") - F.col("lng0"))
-    ) / F.lit(2.0)
-    keep = (
-        F.col("lat0").isNull() | F.col("lat2").isNull() | (area >= F.lit(_VW_TAU))
-    ).cast("int")
-    out = p.withColumn("keep", keep).groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_points"),
-        F.sum("keep").cast("long").alias("n_kept"),
-        F.round(F.sum("keep") / F.count(F.lit(1)), 6).alias("keep_ratio"),
-    )
-    return out.orderBy("user_id")
-
-
-def _trajectory_simplify_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    return f"""
-        WITH pts AS (SELECT user_id, ts, event_id, {lat} AS lat, {lng} AS lng
-                     FROM events),
-        p AS (SELECT user_id, lat, lng,
-                     LAG(lat)  OVER w AS lat0, LAG(lng)  OVER w AS lng0,
-                     LEAD(lat) OVER w AS lat2, LEAD(lng) OVER w AS lng2
-              FROM pts
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        k AS (SELECT user_id,
-                     CASE WHEN lat0 IS NULL OR lat2 IS NULL
-                               OR ABS((lat - lat0) * (lng2 - lng0)
-                                    - (lat2 - lat0) * (lng - lng0)) / 2.0
-                                  >= {_VW_TAU!r} THEN 1 ELSE 0 END AS keep
-              FROM p)
-        SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_points,
-               CAST(SUM(keep) AS BIGINT) AS n_kept,
-               ROUND(CAST(SUM(keep) AS DOUBLE) / COUNT(*), 6) AS keep_ratio
-        FROM k GROUP BY user_id
-        ORDER BY user_id
     """
 
 
@@ -6732,65 +2633,6 @@ def _curation_pipeline_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# web-Mercator XYZ / quadkey tiling (the map-serving address space)
-# ---------------------------------------------------------------------------
-
-_QK_ZOOM = 5
-
-
-def q_quadkey_tiles(spark, sf_dir):
-    """Occupied web-Mercator tiles at zoom 5 with doc counts and the zoom-3
-    parent quadkey — the slippy-map/XYZ address space a tile server fetches,
-    alongside the engine's native equirectangular grid. Encode is ONE
-    generated arithmetic string (geo/mercator.py) run as F.expr here and
-    verbatim in the oracle; the rollup groups on the BIGINT (x, y) pair and
-    renders quadkey strings only per OUTPUT group."""
-    from raptor_service_spark.geo.mercator import (
-        quadkey_parent_sql,
-        quadkey_sql,
-        xtile_sql,
-        ytile_sql,
-    )
-
-    lat_s, lng_s = _latlng_sql("doc_id")
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    tiles = d.select(
-        F.expr(xtile_sql(lng_s, _QK_ZOOM)).alias("x"),
-        F.expr(ytile_sql(lat_s, _QK_ZOOM)).alias("y"),
-    )
-    agg = tiles.groupBy("x", "y").agg(F.count(F.lit(1)).alias("n_docs"))
-    qk = quadkey_sql("x", "y", _QK_ZOOM)
-    return agg.select(
-        F.expr(qk).alias("quadkey"),
-        F.expr(quadkey_parent_sql(qk, 2)).alias("quadkey_z3"),
-        "x",
-        "y",
-        "n_docs",
-    ).orderBy("quadkey")
-
-
-def _quadkey_tiles_sql() -> str:
-    from raptor_service_spark.geo.mercator import (
-        quadkey_parent_sql,
-        quadkey_sql,
-        xtile_sql,
-        ytile_sql,
-    )
-
-    lat_s, lng_s = _latlng_sql("doc_id")
-    qk = quadkey_sql("x", "y", _QK_ZOOM)
-    return f"""
-        WITH t AS (SELECT {xtile_sql(lng_s, _QK_ZOOM)} AS x,
-                          {ytile_sql(lat_s, _QK_ZOOM)} AS y
-                   FROM documents),
-        a AS (SELECT x, y, COUNT(*) AS n_docs FROM t GROUP BY 1, 2)
-        SELECT {qk} AS quadkey, {quadkey_parent_sql(qk, 2)} AS quadkey_z3,
-               x, y, n_docs
-        FROM a ORDER BY quadkey
-    """
-
-
-# ---------------------------------------------------------------------------
 # sub-document dedup: span-level first-occurrence + reassembly
 # ---------------------------------------------------------------------------
 
@@ -6813,195 +2655,8 @@ def _span_dedup_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# point-pattern statistics: Ripley's K and Mann-Kendall emerging hotspots
+# sequence packing into fixed-size context windows
 # ---------------------------------------------------------------------------
-
-_RIPLEY_BANDS = [0.5, 1.0, 2.0]
-
-
-def q_ripley_k(spark, sf_dir):
-    """Multi-band Ripley's K / L over the document point pattern (degree
-    space, naive edge handling): is the corpus spatially clustered, and at
-    what scale? Pairs come from ONE grid ε-join at the widest band — no
-    all-pairs join (operators/spatial_stats.py:ripley_k scale notes)."""
-    from raptor_service_spark.operators.spatial_stats import ripley_k
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(F.col("doc_id").alias("id"), lat.alias("lat"), lng.alias("lng"))
-    return ripley_k(pts, bands=_RIPLEY_BANDS)
-
-
-def _ripley_k_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import ripley_k_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    return ripley_k_sql("documents", "doc_id", lat, lng, bands=_RIPLEY_BANDS)
-
-
-def q_emerging_hotspots(spark, sf_dir):
-    """Space-time-cube trend classification: per res-3 cell, the Mann-Kendall
-    z over the daily event-count series labels the cell increasing /
-    decreasing / flat — the 'emerging hot spot' companion of the static
-    Getis-Ord Gi*. Event rows see exactly one shuffle (the (cell, day)
-    cube agg); the day-pair join is bounded by the calendar, not the data
-    (operators/spatial_stats.py:mann_kendall_cells scale notes)."""
-    from raptor_service_spark.operators.spatial_stats import mann_kendall_cells
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        F.col("ts"), lat.alias("lat"), lng.alias("lng")
-    )
-    return mann_kendall_cells(pts, res=3, min_days=8)
-
-
-def _emerging_hotspots_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import mann_kendall_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return mann_kendall_sql(
-        "(SELECT event_id, ts FROM events)", lat, lng, res=3, min_days=8
-    )
-
-
-def q_cusum_cells(spark, sf_dir):
-    """Per-cell CUSUM change-point day (max deviation of the cumulative
-    daily count from a constant-rate line) — completes the trend family:
-    Mann-Kendall = direction, Theil-Sen = magnitude, CUSUM = WHEN. See
-    `operators/spatial_stats.py`."""
-    from raptor_service_spark.operators.spatial_stats import cusum_cells
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(F.col("ts"), lat.alias("lat"), lng.alias("lng"))
-    return cusum_cells(pts, res=3, min_days=8)
-
-
-def _cusum_cells_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import cusum_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return cusum_sql("(SELECT event_id, ts FROM events)", lat, lng, res=3, min_days=8)
-
-
-def q_theil_sen(spark, sf_dir):
-    """Per-cell Theil-Sen slope (median of pairwise daily-count slopes) —
-    the robust trend magnitude next to Mann-Kendall's direction test; same
-    one-shuffle space-time-cube shape. See `operators/spatial_stats.py`."""
-    from raptor_service_spark.operators.spatial_stats import theil_sen_cells
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(F.col("ts"), lat.alias("lat"), lng.alias("lng"))
-    return theil_sen_cells(pts, res=3, min_days=8)
-
-
-def _theil_sen_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import theil_sen_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return theil_sen_sql("(SELECT event_id, ts FROM events)", lat, lng, res=3, min_days=8)
-
-
-_KANON_K, _KANON_LADDER = 5, (8, 6, 4, 2, 0)
-
-
-def q_kanon_cells(spark, sf_dir):
-    """k-anonymous location generalization (the privacy scrub a training
-    pipeline applies before releasing location-derived features): each
-    user's res-8 home cell is coarsened up the parent ladder (8→6→4→2→0)
-    to the FINEST resolution whose cell contains ≥ k=5 users' homes — the
-    classic spatial k-anonymity hierarchy walk, closed-form over the
-    ladder (no iteration: all levels counted in one agg, per-user argmax
-    of qualifying levels). All-integer → exact oracle. Scale shape: one
-    (user, cell) count shuffle + WindowGroupLimit argmax; the ladder
-    explode (×5) and the level-occupancy agg run on the O(users) home
-    table."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col, cell_parent_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    counts = (
-        ev.withColumn("cell", cell_encode_col(lat, lng, _KANON_LADDER[0]))
-        .groupBy("user_id", "cell")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("n_events").desc(), F.col("cell").asc()
-    )
-    home = (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("user_id", "cell")
-    )
-    ladder = home.select(
-        "user_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("res"),
-                        (
-                            F.col("cell")
-                            if r == _KANON_LADDER[0]
-                            else cell_parent_col("cell", _KANON_LADDER[0], r)
-                        ).alias("acell"),
-                    )
-                    for r in _KANON_LADDER
-                ]
-            )
-        ).alias("lv"),
-    ).select("user_id", F.col("lv.res").alias("res"), F.col("lv.acell").alias("acell"))
-    occ = ladder.groupBy("res", "acell").agg(F.count(F.lit(1)).alias("n_users"))
-    return (
-        ladder.join(occ, ["res", "acell"])
-        .filter(F.col("n_users") >= _KANON_K)
-        .groupBy("user_id")
-        .agg(F.max(F.struct("res", "acell", "n_users")).alias("m"))
-        .select(
-            "user_id",
-            F.col("m.res").alias("anon_res"),
-            F.col("m.acell").alias("anon_cell"),
-            F.col("m.n_users").alias("n_sharing"),
-        )
-    )
-
-
-def _kanon_cells_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql, cell_parent_sql
-
-    lat, lng = _latlng_sql("event_id")
-    top = _KANON_LADDER[0]
-    cell = cell_encode_sql(lat, lng, top)
-    levels = ", ".join(
-        f"({r}, {'h.cell' if r == top else cell_parent_sql('h.cell', top, r)})"
-        for r in _KANON_LADDER
-    )
-    return f"""
-        WITH c AS (SELECT user_id, {cell} AS cell, COUNT(*) AS n_events
-                   FROM events GROUP BY 1, 2),
-        h AS (SELECT user_id, cell FROM (
-                  SELECT user_id, cell,
-                         ROW_NUMBER() OVER (PARTITION BY user_id
-                                            ORDER BY n_events DESC, cell) AS rk
-                  FROM c) WHERE rk = 1),
-        ladder AS (SELECT h.user_id, v.res, v.acell
-                   FROM h CROSS JOIN LATERAL (VALUES {levels}) v(res, acell)),
-        occ AS (SELECT res, acell, COUNT(*) AS n_users
-                FROM ladder GROUP BY 1, 2),
-        q AS (SELECT l.user_id, l.res, l.acell, o.n_users,
-                     ROW_NUMBER() OVER (PARTITION BY l.user_id
-                                        ORDER BY l.res DESC) AS rk
-              FROM ladder l JOIN occ o
-                ON o.res = l.res AND o.acell = l.acell
-              WHERE o.n_users >= {_KANON_K})
-        SELECT user_id, res AS anon_res, acell AS anon_cell,
-               n_users AS n_sharing
-        FROM q WHERE rk = 1
-    """
 
 
 _PACK_BUDGET = 4096
@@ -7082,1491 +2737,8 @@ def _seq_packing_sql() -> str:
     """
 
 
-def q_cohort_retention(spark, sf_dir):
-    """Weekly cohort-retention matrix — the product-analytics staple next
-    to the funnel: users are cohorted by first-activity week; cell
-    (cohort_week, week_offset) counts cohort members active that many
-    weeks later. All-integer (exact oracle). Scale shape: one (user, week)
-    distinct agg over events (map-side combinable), one per-user min agg,
-    one broadcast-able O(users) join, one final count agg."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts")
-    week = F.floor(
-        F.unix_timestamp(F.col("ts").cast("timestamp")) / F.lit(604800)
-    ).cast("long")
-    uw = ev.select("user_id", week.alias("week")).distinct()
-    cohort = uw.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    return (
-        uw.join(cohort, "user_id")
-        .groupBy("cohort_week", (F.col("week") - F.col("cohort_week")).alias("week_offset"))
-        .agg(F.countDistinct("user_id").alias("n_active"))
-    )
-
-
-def _cohort_retention_sql() -> str:
-    return """
-        WITH uw AS (SELECT DISTINCT user_id,
-                           CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP)) / 604800)
-                                AS BIGINT) AS week
-                    FROM events),
-        c AS (SELECT user_id, MIN(week) AS cohort_week FROM uw GROUP BY 1)
-        SELECT c.cohort_week, uw.week - c.cohort_week AS week_offset,
-               COUNT(DISTINCT uw.user_id) AS n_active
-        FROM uw JOIN c ON uw.user_id = c.user_id
-        GROUP BY 1, 2
-    """
-
-
-def q_adoption_curve(spark, sf_dir):
-    """Daily adoption curve: new users per day (first activity) and the
-    running cumulative user count — one per-user min agg + one day agg +
-    one cumulative window over the O(days) daily table. All-integer."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts")
-    day = F.floor(
-        F.unix_timestamp(F.col("ts").cast("timestamp")) / F.lit(86400)
-    ).cast("long")
-    first = ev.select("user_id", day.alias("day")).groupBy("user_id").agg(
-        F.min("day").alias("day")
-    )
-    daily = first.groupBy("day").agg(F.count(F.lit(1)).alias("n_new"))
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return daily.select("day", "n_new", F.sum("n_new").over(w).alias("cum_users"))
-
-
-def _adoption_curve_sql() -> str:
-    return """
-        WITH f AS (SELECT user_id,
-                          MIN(CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP)) / 86400)
-                                   AS BIGINT)) AS day
-                   FROM events GROUP BY 1),
-        d AS (SELECT day, COUNT(*) AS n_new FROM f GROUP BY 1)
-        SELECT day, n_new,
-               CAST(SUM(n_new) OVER (ORDER BY day
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                              AND CURRENT ROW) AS BIGINT)
-                   AS cum_users
-        FROM d
-    """
-
-
-_PMI_MIN_COUNT, _PMI_TOPK = 20, 25
-
-
-def q_pmi_bigrams(spark, sf_dir):
-    """PMI bigram collocations — the corpus-statistics classic (which word
-    pairs co-occur more than chance): pmi = ln((c_ab/N_bi)·(N_uni/c_a)·
-    (N_uni/c_b)), top-25 by PMI among bigrams seen ≥ 50 times. Bigrams are
-    built ARRAY-side (transform over the token array — identical
-    construction in DuckDB's list_transform, no window/self-join); counts
-    are two hash aggs; the unigram/total joins broadcast (vocab-sized).
-    Scale: docs are scanned once; everything after is O(vocab²)-bounded."""
-    d = _read(spark, sf_dir, "documents").select("text")
-    toks = d.select(
-        F.split(F.trim(F.col("text")), r"\s+").alias("arr")
-    ).filter(F.size("arr") >= 2)
-    uni = toks.select(F.explode("arr").alias("w")).groupBy("w").agg(
-        F.count(F.lit(1)).alias("c_w")
-    )
-    bi = (
-        toks.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(arr) - 1), "
-                    "i -> concat(element_at(arr, i), '_', element_at(arr, i + 1)))"
-                )
-            ).alias("ab")
-        )
-        .groupBy("ab")
-        .agg(F.count(F.lit(1)).alias("c_ab"))
-        .filter(F.col("c_ab") >= _PMI_MIN_COUNT)
-        .withColumn("a", F.substring_index("ab", "_", 1))
-        .withColumn("b", F.substring_index("ab", "_", -1))
-    )
-    n_uni = uni.agg(F.sum("c_w").cast("long").alias("n_uni"))
-    n_bi = toks.select((F.size("arr") - 1).alias("k")).agg(
-        F.sum("k").cast("long").alias("n_bi")
-    )
-    j = (
-        bi.join(F.broadcast(uni.select(F.col("w").alias("a"), F.col("c_w").alias("c_a"))), "a")
-        .join(F.broadcast(uni.select(F.col("w").alias("b"), F.col("c_w").alias("c_b"))), "b")
-        .join(F.broadcast(n_uni))
-        .join(F.broadcast(n_bi))
-    )
-    pmi = F.expr(
-        "ROUND(LN(((CAST(c_ab AS DOUBLE) / n_bi) * n_uni / c_a) * n_uni / c_b), 6)"
-    )
-    return (
-        j.select("a", "b", "c_ab", pmi.alias("pmi"))
-        .orderBy(F.desc("pmi"), "a", "b")
-        .limit(_PMI_TOPK)
-    )
-
-
-def _pmi_bigrams_sql() -> str:
-    return f"""
-        WITH t AS (SELECT regexp_split_to_array(trim(text), '\\s+') AS arr
-                   FROM documents
-                   WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 2),
-        uni AS (SELECT UNNEST(arr) AS w FROM t),
-        u AS (SELECT w, COUNT(*) AS c_w FROM uni GROUP BY 1),
-        bg AS (SELECT UNNEST(list_transform(range(1, len(arr)),
-                                            i -> arr[i] || '_' || arr[i + 1])) AS ab
-               FROM t),
-        b AS (SELECT ab, COUNT(*) AS c_ab FROM bg GROUP BY 1
-              HAVING COUNT(*) >= {_PMI_MIN_COUNT}),
-        nu AS (SELECT CAST(SUM(c_w) AS BIGINT) AS n_uni FROM u),
-        nb AS (SELECT CAST(SUM(len(arr) - 1) AS BIGINT) AS n_bi FROM t),
-        j AS (SELECT split_part(b.ab, '_', 1) AS a,
-                     split_part(b.ab, '_', 2) AS b, b.c_ab,
-                     ua.c_w AS c_a, ub.c_w AS c_b, nu.n_uni, nb.n_bi
-              FROM b JOIN u ua ON ua.w = split_part(b.ab, '_', 1)
-                     JOIN u ub ON ub.w = split_part(b.ab, '_', 2)
-                     CROSS JOIN nu CROSS JOIN nb)
-        SELECT a, b, c_ab,
-               ROUND(LN(((CAST(c_ab AS DOUBLE) / n_bi) * n_uni / c_a)
-                        * n_uni / c_b), 6) AS pmi
-        FROM j
-        ORDER BY pmi DESC, a, b LIMIT {_PMI_TOPK}
-    """
-
-
-_WS_K = 50
-
-
-def q_weighted_sample(spark, sf_dir):
-    """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis A-Res):
-    each doc draws u ∈ (0,1) and ranks by key = ln(u)/w (equivalent to
-    u^(1/w); higher weight → stochastically better rank); the global top-k
-    is an exact weighted sample. Deterministic and engine-portable: u is
-    the doc's md5 prefix scaled by 2⁻³² (exact dyadic rational — no RNG),
-    w = n_chars; one codegen projection + TakeOrderedAndProject, no
-    shuffle of the corpus. The reproducible quality-weighted sampler a
-    curation pipeline uses for eval-set draws."""
-    d = _read(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("double")
-        + F.lit(1.0)
-    ) / F.lit(4294967296.0)
-    key = F.log(u) / F.col("n_chars").cast("double")
-    return (
-        d.select("doc_id", "n_chars", F.round(key, 9).alias("skey"))
-        .orderBy(F.desc("skey"), "doc_id")
-        .limit(_WS_K)
-    )
-
-
-def _weighted_sample_sql() -> str:
-    return f"""
-        WITH d AS (
-            SELECT doc_id, n_chars,
-                   (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                         AS BIGINT) + 1.0) / 4294967296.0 AS u
-            FROM documents)
-        SELECT doc_id, n_chars, ROUND(LN(u) / CAST(n_chars AS DOUBLE), 9) AS skey
-        FROM d
-        ORDER BY skey DESC, doc_id LIMIT {_WS_K}
-    """
-
-
-def q_user_streaks(spark, sf_dir):
-    """Longest consecutive-day activity streak per user — the classic
-    gaps-and-islands pattern: within a user's DISTINCT active days, the
-    quantity day − row_number() is constant exactly along a consecutive
-    run, so one distinct agg + one window + one max-of-counts gives the
-    streak. All-integer. One (user) shuffle; islands never materialize
-    pairs."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts")
-    day = F.floor(
-        F.unix_timestamp(F.col("ts").cast("timestamp")) / F.lit(86400)
-    ).cast("long")
-    days = ev.select("user_id", day.alias("day")).distinct()
-    w = Window.partitionBy("user_id").orderBy("day")
-    isl = days.withColumn("grp", F.col("day") - F.row_number().over(w))
-    runs = isl.groupBy("user_id", "grp").agg(F.count(F.lit(1)).alias("run_len"))
-    return runs.groupBy("user_id").agg(
-        F.max("run_len").alias("longest_streak"),
-        F.count(F.lit(1)).alias("n_streaks"),
-    )
-
-
-def _user_streaks_sql() -> str:
-    return """
-        WITH d AS (SELECT DISTINCT user_id,
-                          CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP)) / 86400)
-                               AS BIGINT) AS day
-                   FROM events),
-        i AS (SELECT user_id, day,
-                     day - ROW_NUMBER() OVER (PARTITION BY user_id
-                                              ORDER BY day) AS grp
-              FROM d),
-        r AS (SELECT user_id, grp, COUNT(*) AS run_len
-              FROM i GROUP BY 1, 2)
-        SELECT user_id, CAST(MAX(run_len) AS BIGINT) AS longest_streak,
-               COUNT(*) AS n_streaks
-        FROM r GROUP BY 1
-    """
-
-
-_BENFORD_DIGIT_SQL = (
-    "CAST(FLOOR(CASE "
-    "WHEN ABS(value) >= 100.0 THEN ABS(value) / 100.0 "
-    "WHEN ABS(value) >= 10.0 THEN ABS(value) / 10.0 "
-    "WHEN ABS(value) >= 1.0 THEN ABS(value) "
-    "WHEN ABS(value) >= 0.1 THEN ABS(value) * 10.0 "
-    "ELSE ABS(value) * 100.0 END) AS INT)"
-)
-
-
-def q_benford_values(spark, sf_dir):
-    """Benford first-digit audit of the event `value` column — the
-    data-quality screen: per leading digit 1-9 of |value|, observed count,
-    Benford-expected count (N·log10(1+1/d), a literal-constant table
-    shared with the oracle), and the χ² contribution. Codegen digit
-    extraction + one 9-group agg."""
-    ev = _read(spark, sf_dir, "events").select("value").filter(
-        F.abs(F.col("value")) > 0
-    )
-    # leading digit by an exact comparison ladder (values are bounded in
-    # [0.01, 1000) by the generator): every branch is one IEEE multiply/
-    # divide — bit-identical across engines, no libm log10 whose 1-ulp
-    # slack could flip FLOOR at power-of-ten boundaries. The ladder is ONE
-    # string shared with the oracle; rows whose scaled mantissa rounds
-    # outside [1, 9] (boundary doubles) are excluded IDENTICALLY by both.
-    obs = (
-        ev.select(F.expr(_BENFORD_DIGIT_SQL).alias("digit"))
-        .filter(F.col("digit").between(1, 9))
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).alias("n_obs"))
-    )
-    n = obs.agg(F.sum("n_obs").cast("long").alias("n_total"))
-    exp = F.expr("n_total * LOG10(1.0 + 1.0 / digit)")
-    return (
-        obs.join(F.broadcast(n))
-        .select(
-            "digit",
-            "n_obs",
-            F.round(exp, 6).alias("n_exp"),
-            F.round((F.col("n_obs") - exp) * (F.col("n_obs") - exp) / exp, 6).alias(
-                "chi2_part"
-            ),
-        )
-    )
-
-
-def _benford_values_sql() -> str:
-    return f"""
-        WITH v AS (SELECT value FROM events WHERE ABS(value) > 0),
-        o AS (SELECT digit, COUNT(*) AS n_obs
-              FROM (SELECT {_BENFORD_DIGIT_SQL} AS digit FROM v)
-              WHERE digit BETWEEN 1 AND 9 GROUP BY 1),
-        t AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_total FROM o)
-        SELECT digit, n_obs,
-               ROUND(n_total * LOG10(1.0 + 1.0 / digit), 6) AS n_exp,
-               ROUND((n_obs - n_total * LOG10(1.0 + 1.0 / digit))
-                     * (n_obs - n_total * LOG10(1.0 + 1.0 / digit))
-                     / (n_total * LOG10(1.0 + 1.0 / digit)), 6) AS chi2_part
-        FROM o CROSS JOIN t
-    """
-
-
-# Pearson r from the six rounded sums — one shared closed-form string per
-# pair (a, b) over columns n, s_<a>, s_<b>, s_<a><a>, s_<b><b>, s_<a><b>.
-def _pearson_expr(a: str, b: str) -> str:
-    return (
-        f"ROUND((n * s_{a}{b} - s_{a} * s_{b}) / "
-        f"(SQRT(n * s_{a}{a} - s_{a} * s_{a}) * "
-        f"SQRT(n * s_{b}{b} - s_{b} * s_{b})), 6)"
-    )
-
-
-def q_value_correlations(spark, sf_dir):
-    """Pearson correlation screen: r(value, hour-of-day), r(value, lat),
-    r(value, lng) in ONE scalar aggregate — the feature/leakage screen a
-    training pipeline runs before using a column. All sums rounded to 9 dp
-    before the shared closed-form ratio (the OLS/gravity protocol); hour
-    is exact integer arithmetic."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    hour = F.floor(
-        (F.unix_timestamp(F.col("ts").cast("timestamp")) % 86400) / F.lit(3600)
-    ).cast("double")
-    base = ev.select(
-        F.col("value").alias("v"), hour.alias("h"), lat.alias("a"), lng.alias("g")
-    )
-    s = lambda c: F.round(F.sum(c), 9)
-    sums = base.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        s(F.col("v")).alias("s_v"),
-        s(F.col("v") * F.col("v")).alias("s_vv"),
-        s(F.col("h")).alias("s_h"),
-        s(F.col("h") * F.col("h")).alias("s_hh"),
-        s(F.col("v") * F.col("h")).alias("s_vh"),
-        s(F.col("a")).alias("s_a"),
-        s(F.col("a") * F.col("a")).alias("s_aa"),
-        s(F.col("v") * F.col("a")).alias("s_va"),
-        s(F.col("g")).alias("s_g"),
-        s(F.col("g") * F.col("g")).alias("s_gg"),
-        s(F.col("v") * F.col("g")).alias("s_vg"),
-    )
-    return sums.select(
-        F.col("n").cast("long").alias("n_events"),
-        F.expr(_pearson_expr("v", "h")).alias("r_value_hour"),
-        F.expr(_pearson_expr("v", "a")).alias("r_value_lat"),
-        F.expr(_pearson_expr("v", "g")).alias("r_value_lng"),
-    )
-
-
-def _value_correlations_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    return f"""
-        WITH base AS (
-            SELECT value AS v,
-                   CAST(FLOOR((CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP)))
-                                    AS BIGINT) % 86400)
-                              / 3600) AS DOUBLE) AS h,
-                   {lat} AS a, {lng} AS g
-            FROM events),
-        sums AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                   ROUND(SUM(v), 9) AS s_v, ROUND(SUM(v * v), 9) AS s_vv,
-                   ROUND(SUM(h), 9) AS s_h, ROUND(SUM(h * h), 9) AS s_hh,
-                   ROUND(SUM(v * h), 9) AS s_vh,
-                   ROUND(SUM(a), 9) AS s_a, ROUND(SUM(a * a), 9) AS s_aa,
-                   ROUND(SUM(v * a), 9) AS s_va,
-                   ROUND(SUM(g), 9) AS s_g, ROUND(SUM(g * g), 9) AS s_gg,
-                   ROUND(SUM(v * g), 9) AS s_vg
-            FROM base)
-        SELECT CAST(n AS BIGINT) AS n_events,
-               {_pearson_expr('v', 'h')} AS r_value_hour,
-               {_pearson_expr('v', 'a')} AS r_value_lat,
-               {_pearson_expr('v', 'g')} AS r_value_lng
-        FROM sums
-    """
-
-
 # ---------------------------------------------------------------------------
-# trajectory speed anomalies — robust MAD outlier screen (session 6)
-# ---------------------------------------------------------------------------
-
-
-def _weighted_median(hist: DataFrame, val: str, cnt: str) -> DataFrame:
-    """Exact interpolated median (quantile_cont semantics: index (n-1)/2,
-    linear interpolation) computed from a (value, count) HISTOGRAM — the
-    shuffle and the cumulative window run over DISTINCT values only, never
-    raw rows, so quantizing the value bounds the state at any scale. Returns
-    a 1-row DataFrame (med)."""
-    from pyspark.sql import Window
-
-    wcum = Window.orderBy(val).rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.withColumn("cum", F.sum(cnt).over(wcum))
-    tot = cum.agg(F.max("cum").alias("n"))
-    j = cum.crossJoin(F.broadcast(tot))
-    i = (F.col("n") - F.lit(1)) / F.lit(2.0)
-    vlo = F.min(F.when(F.col("cum") >= F.floor(i) + 1, F.col(val)))
-    vhi = F.min(F.when(F.col("cum") >= F.ceil(i) + 1, F.col(val)))
-    return j.agg(
-        vlo.alias("vlo"), vhi.alias("vhi"), F.max(i - F.floor(i)).alias("frac")
-    ).select(
-        (F.col("vlo") + F.col("frac") * (F.col("vhi") - F.col("vlo"))).alias("med")
-    )
-
-
-def q_speed_anomalies(spark, sf_dir):
-    """Teleport detection: per-user consecutive-event speeds (haversine km /
-    elapsed hours, quantized to 0.01 km/h), flagged when above the robust
-    cutoff median + 3·1.4826·MAD. Scale shape: one user-partitioned window
-    builds the legs; median and MAD come from _weighted_median over the
-    DISTINCT-speed histogram (quantization bounds the cumulative-window
-    state — never a raw-row global sort); the cutoff broadcasts back onto
-    the aggregated legs. Oracle computes the same statistic with
-    quantile_cont. Top-20 fastest anomalous legs."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.distance import haversine_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    dt_h = (ts_us - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))) / F.lit(
-        3600000000.0
-    )
-    leg = haversine_col(
-        F.lag("lat").over(w), F.lag("lng").over(w), F.col("lat"), F.col("lng")
-    )
-    legs = (
-        pts.withColumn("dt_h", dt_h)
-        .withColumn("leg_km", leg)
-        .filter(F.col("dt_h") > 0)
-        .select(
-            "user_id",
-            "event_id",
-            F.round(F.col("leg_km") / F.col("dt_h"), 2).alias("speed_kmh"),
-        )
-    )
-    hist = legs.groupBy("speed_kmh").agg(F.count(F.lit(1)).alias("c"))
-    med = _weighted_median(hist, "speed_kmh", "c").select(
-        F.round("med", 6).alias("med")
-    )
-    dev_hist = (
-        hist.crossJoin(F.broadcast(med))
-        .groupBy(
-            F.round(F.abs(F.col("speed_kmh") - F.col("med")), 6).alias("dv")
-        )
-        .agg(F.sum("c").alias("c"))
-    )
-    mad = _weighted_median(dev_hist, "dv", "c").select(
-        F.round("med", 6).alias("mad")
-    )
-    cut = (
-        med.crossJoin(mad)
-        .select(
-            F.round(F.col("med") + F.lit(4.4478) * F.col("mad"), 6).alias("cutoff")
-        )
-    )
-    return (
-        legs.crossJoin(F.broadcast(cut))
-        .filter(F.col("speed_kmh") > F.col("cutoff"))
-        .orderBy(F.col("speed_kmh").desc(), "event_id")
-        .limit(20)
-    )
-
-
-def _speed_anomalies_sql() -> str:
-    from raptor_service_spark.geo.distance import haversine_sql
-
-    lat, lng = _latlng_sql("event_id")
-    hav = haversine_sql("plat", "plng", "lat", "lng")
-    return f"""
-        WITH pts AS (
-            SELECT event_id, ts, user_id, {lat} AS lat, {lng} AS lng
-            FROM events),
-        lagged AS (
-            SELECT user_id, event_id, lat, lng,
-                   LAG(lat) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       AS plat,
-                   LAG(lng) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       AS plng,
-                   (epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-                        PARTITION BY user_id ORDER BY ts, event_id))
-                       / 3600000000.0 AS dt_h
-            FROM pts),
-        legs AS (
-            SELECT user_id, event_id, ROUND({hav} / dt_h, 2) AS speed_kmh
-            FROM lagged WHERE dt_h > 0),
-        med AS (SELECT ROUND(quantile_cont(speed_kmh, 0.5), 6) AS med FROM legs),
-        mad AS (SELECT ROUND(quantile_cont(
-                    ROUND(ABS(speed_kmh - med), 6), 0.5), 6) AS mad
-                FROM legs CROSS JOIN med),
-        cut AS (SELECT ROUND(med + 4.4478 * mad, 6) AS cutoff
-                FROM med CROSS JOIN mad)
-        SELECT user_id, event_id, speed_kmh, cutoff
-        FROM legs CROSS JOIN cut
-        WHERE speed_kmh > cutoff
-        ORDER BY speed_kmh DESC, event_id
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# Kulldorff-style space-time scan statistic (session 6)
-# ---------------------------------------------------------------------------
-
-_SCAN_RES, _SCAN_MAX_DAYS, _SCAN_TOPK = 3, 7, 10
-
-
-def q_spacetime_scan(spark, sf_dir):
-    """Kulldorff space-time scan (cylindrical zones, Poisson LLR): every
-    (res-3 cell) × (contiguous day window ≤ 7 days) is a candidate cluster;
-    expected count under the null is cell_total · window_total / C (the
-    space-time permutation model); LLR = c·ln(c/e) + (C−c)·ln((C−c)/(C−e))
-    for over-dense zones. Top-10 zones by LLR — the disease-outbreak /
-    event-burst detector over the tile grid.
-
-    Scale shape: points are touched ONCE (the (cell, day) cube agg); zone
-    enumeration joins the cube against the O(days·max_len) window list and
-    re-aggregates — all work is on aggregated tables bounded by
-    cells × calendar, never points. Exact-integer counts; LLR doubles
-    rounded 6 dp; ties broken (cell, d1, d2)."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    day = F.expr("CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 86400000000.0) AS BIGINT)")
-    cube = (
-        ev.select(cell_encode_col(lat, lng, _SCAN_RES).alias("cell"), day.alias("day"))
-        .groupBy("cell", "day")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    day_tot = cube.groupBy("day").agg(F.sum("c").alias("dc"))
-    cell_tot = cube.groupBy("cell").agg(F.sum("c").alias("cc"))
-    tot = cube.agg(F.sum("c").alias("C"))
-    wins = (
-        day_tot.select(F.col("day").alias("d1"))
-        .select("d1", F.explode(F.sequence(F.lit(0), F.lit(_SCAN_MAX_DAYS - 1))).alias("len"))
-        .select("d1", (F.col("d1") + F.col("len")).alias("d2"))
-    )
-    win_tot = (
-        wins.join(
-            F.broadcast(day_tot),
-            (F.col("day") >= F.col("d1")) & (F.col("day") <= F.col("d2")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.sum("dc").alias("wc"))
-    )
-    zone = (
-        cube.join(
-            F.broadcast(wins),
-            (F.col("day") >= F.col("d1")) & (F.col("day") <= F.col("d2")),
-        )
-        .groupBy("cell", "d1", "d2")
-        .agg(F.sum("c").alias("zc"))
-    )
-    e = F.col("cc") * F.col("wc") / F.col("C")
-    zc, C = F.col("zc").cast("double"), F.col("C").cast("double")
-    llr = F.when(
-        zc > e,
-        zc * F.log(zc / e) + (C - zc) * F.log((C - zc) / (C - e)),
-    ).otherwise(F.lit(0.0))
-    return (
-        zone.join(F.broadcast(cell_tot), "cell")
-        .join(F.broadcast(win_tot), ["d1", "d2"])
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "cell",
-            "d1",
-            "d2",
-            F.col("zc").alias("n_obs"),
-            F.round(e, 6).alias("n_exp"),
-            F.round(llr, 6).alias("llr"),
-        )
-        .orderBy(F.col("llr").desc(), "cell", "d1", "d2")
-        .limit(_SCAN_TOPK)
-    )
-
-
-def _spacetime_scan_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _SCAN_RES)
-    return f"""
-        WITH cube AS (
-            SELECT {cell} AS cell,
-                   CAST(FLOOR(epoch_us(ts) / 86400000000.0) AS BIGINT) AS day,
-                   COUNT(*) AS c
-            FROM events GROUP BY 1, 2),
-        day_tot AS (SELECT day, SUM(c) AS dc FROM cube GROUP BY 1),
-        cell_tot AS (SELECT cell, SUM(c) AS cc FROM cube GROUP BY 1),
-        tot AS (SELECT SUM(c) AS C FROM cube),
-        wins AS (
-            SELECT d1, d1 + len AS d2 FROM
-                (SELECT day AS d1 FROM day_tot) CROSS JOIN
-                (SELECT unnest(generate_series(0, {_SCAN_MAX_DAYS - 1})) AS len)),
-        win_tot AS (
-            SELECT d1, d2, SUM(dc) AS wc
-            FROM wins JOIN day_tot ON day BETWEEN d1 AND d2
-            GROUP BY 1, 2),
-        zone AS (
-            SELECT cell, d1, d2, SUM(c) AS zc
-            FROM cube JOIN wins ON day BETWEEN d1 AND d2
-            GROUP BY 1, 2, 3),
-        scored AS (
-            SELECT z.cell, z.d1, z.d2, z.zc,
-                   ct.cc * wt.wc / CAST(t.C AS DOUBLE) AS e,
-                   CAST(z.zc AS DOUBLE) AS zcd, CAST(t.C AS DOUBLE) AS Cd
-            FROM zone z
-            JOIN cell_tot ct ON z.cell = ct.cell
-            JOIN win_tot wt ON z.d1 = wt.d1 AND z.d2 = wt.d2
-            CROSS JOIN tot t)
-        SELECT cell, d1, d2, CAST(zc AS BIGINT) AS n_obs,
-               ROUND(e, 6) AS n_exp,
-               ROUND(CASE WHEN zcd > e
-                     THEN zcd * LN(zcd / e) + (Cd - zcd) * LN((Cd - zcd) / (Cd - e))
-                     ELSE 0.0 END, 6) AS llr
-        FROM scored
-        ORDER BY llr DESC, cell, d1, d2
-        LIMIT {_SCAN_TOPK}
-    """
-
-
-# ---------------------------------------------------------------------------
-# spatial Gini of cell occupancy (session 6)
-# ---------------------------------------------------------------------------
-
-
-def q_cell_gini(spark, sf_dir):
-    """Gini coefficient of res-4 cell occupancy — the one-number spatial
-    inequality summary (0 = events spread evenly over occupied cells,
-    → 1 = all mass in a few hot tiles). Exact ranked-sum form
-    G = 2·Σᵢ i·x₍ᵢ₎ / (n·Σx) − (n+1)/n over counts ranked ascending with
-    a deterministic cell tie-break; ALL arithmetic is integer until the
-    final division. Points shuffle once; the rank window runs on the
-    O(occupied cells) table."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    occ = (
-        ev.select(cell_encode_col(lat, lng, 4).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    w = Window.orderBy(F.col("x").asc(), F.col("cell").asc())
-    ranked = occ.withColumn("i", F.row_number().over(w))
-    return ranked.agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        F.sum("x").alias("n_points"),
-        F.round(
-            F.lit(2.0) * F.sum(F.col("i") * F.col("x"))
-            / (F.count(F.lit(1)) * F.sum("x"))
-            - (F.count(F.lit(1)) + F.lit(1.0)) / F.count(F.lit(1)),
-            6,
-        ).alias("gini"),
-    )
-
-
-def _cell_gini_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH occ AS (
-            SELECT {cell} AS cell, COUNT(*) AS x FROM events GROUP BY 1),
-        ranked AS (
-            SELECT x, ROW_NUMBER() OVER (ORDER BY x ASC, cell ASC) AS i
-            FROM occ)
-        SELECT COUNT(*) AS n_cells, CAST(SUM(x) AS BIGINT) AS n_points,
-               ROUND(2.0 * SUM(i * x) / (COUNT(*) * SUM(x))
-                     - (COUNT(*) + 1.0) / COUNT(*), 6) AS gini
-        FROM ranked
-    """
-
-
-# ---------------------------------------------------------------------------
-# per-user burstiness (session 6)
-# ---------------------------------------------------------------------------
-
-
-def q_user_burstiness(spark, sf_dir):
-    """Goh-Barabási burstiness B = (σ−μ)/(σ+μ) of per-user inter-arrival
-    times: B → 1 bursty, 0 Poisson, −1 periodic — the behavioral screen
-    separating humans from schedulers/bots. One user window builds gaps
-    (exact integer seconds); per-user moments are one partial+final agg
-    with 9-dp pre-rounded sums; users with ≥ 30 gaps, top-20 by B."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap = F.floor(
-        (ts_us - F.unix_micros(F.lag("ts").over(w).cast("timestamp")))
-        / F.lit(1000000.0)
-    ).cast("double")
-    gaps = (
-        ev.withColumn("g", gap)
-        .filter(F.col("g").isNotNull() & (F.col("g") >= 0))
-        .select("user_id", "g")
-    )
-    mom = gaps.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_gaps"),
-        F.round(F.sum("g"), 9).alias("sg"),
-        F.round(F.sum(F.col("g") * F.col("g")), 9).alias("sgg"),
-    )
-    m = F.col("sg") / F.col("n_gaps")
-    sd = F.sqrt(F.col("sgg") / F.col("n_gaps") - m * m)
-    return (
-        mom.filter(F.col("n_gaps") >= 30)
-        .select(
-            "user_id",
-            "n_gaps",
-            F.round((sd - m) / (sd + m), 6).alias("burstiness"),
-        )
-        .orderBy(F.col("burstiness").desc(), "user_id")
-        .limit(20)
-    )
-
-
-def _user_burstiness_sql() -> str:
-    return """
-        WITH gaps AS (
-            SELECT user_id,
-                   CAST(FLOOR((epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-                        PARTITION BY user_id ORDER BY ts, event_id))
-                        / 1000000.0) AS DOUBLE) AS g
-            FROM events
-            QUALIFY g IS NOT NULL AND g >= 0),
-        mom AS (
-            SELECT user_id, COUNT(*) AS n_gaps,
-                   ROUND(SUM(g), 9) AS sg,
-                   ROUND(SUM(g * g), 9) AS sgg
-            FROM gaps GROUP BY 1)
-        SELECT user_id, n_gaps,
-               ROUND((SQRT(sgg / n_gaps - (sg / n_gaps) * (sg / n_gaps))
-                      - sg / n_gaps)
-                     / (SQRT(sgg / n_gaps - (sg / n_gaps) * (sg / n_gaps))
-                      + sg / n_gaps), 6) AS burstiness
-        FROM mom WHERE n_gaps >= 30
-        ORDER BY burstiness DESC, user_id
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# char entropy + Markov next-cell (session 6)
-# ---------------------------------------------------------------------------
-
-
-def q_doc_char_entropy(spark, sf_dir):
-    """Per-document character-level Shannon entropy — the compressibility /
-    gibberish screen (templated or repeated text scores low, encrypted or
-    random blobs high). H = ln n − Σ k·ln k / n over the per-doc char
-    histogram (the same exact decomposition as user_cell_entropy, so the
-    only float work happens on AGGREGATED (doc, char) counts). Bottom-20
-    most-compressible docs."""
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    # Guard: sequence(1, 0) descends in Spark, so empty text must be
-    # filtered before the transform (DuckDB's generate_series(1, 0) is
-    # empty; an empty doc has no defined entropy row on either side).
-    chars = d.filter(F.length("text") >= 1).select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, length(text)), i -> substring(text, i, 1))"
-            )
-        ).alias("ch"),
-    )
-    hist = chars.groupBy("doc_id", "ch").agg(F.count(F.lit(1)).alias("k"))
-    ent = hist.groupBy("doc_id").agg(
-        F.sum("k").alias("n_chars"),
-        F.round(
-            F.log(F.sum("k").cast("double"))
-            - F.sum(F.col("k") * F.log(F.col("k").cast("double")))
-            / F.sum("k").cast("double"),
-            6,
-        ).alias("entropy"),
-    )
-    return ent.orderBy(F.col("entropy").asc(), "doc_id").limit(20)
-
-
-def _doc_char_entropy_sql() -> str:
-    return """
-        WITH chars AS (
-            SELECT doc_id, unnest(list_transform(
-                generate_series(1, length(text)),
-                i -> substring(text, i, 1))) AS ch
-            FROM documents),
-        hist AS (SELECT doc_id, ch, COUNT(*) AS k FROM chars GROUP BY 1, 2),
-        ent AS (
-            SELECT doc_id, CAST(SUM(k) AS BIGINT) AS n_chars,
-                   ROUND(LN(CAST(SUM(k) AS DOUBLE))
-                         - SUM(k * LN(CAST(k AS DOUBLE)))
-                           / CAST(SUM(k) AS DOUBLE), 6) AS entropy
-            FROM hist GROUP BY 1)
-        SELECT doc_id, n_chars, entropy FROM ent
-        ORDER BY entropy ASC, doc_id
-        LIMIT 20
-    """
-
-
-def q_cell_markov(spark, sf_dir):
-    """First-order Markov next-cell prediction over the OD transition
-    graph: for each res-3 cell, the top-3 most likely next cells with
-    exact count-ratio probabilities — the 'where do trajectories go from
-    here' table that powers location prediction. Points shuffle once (the
-    per-user lag window); everything after runs on the aggregated
-    transition counts; the rank is a WindowGroupLimit on integer counts
-    (no float ordering)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    trans = (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(
-            F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell"))
-        )
-        .groupBy(F.col("prev_cell").alias("from_cell"), F.col("cell").alias("to_cell"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tot = trans.groupBy("from_cell").agg(F.sum("n").alias("n_from"))
-    wr = Window.partitionBy("from_cell").orderBy(
-        F.col("n").desc(), F.col("to_cell").asc()
-    )
-    return (
-        trans.join(tot, "from_cell")
-        .withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "from_cell",
-            "to_cell",
-            "n",
-            F.round(F.col("n") / F.col("n_from").cast("double"), 6).alias("p"),
-            "rk",
-        )
-        .orderBy("from_cell", "rk")
-    )
-
-
-def _cell_markov_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH pts AS (
-            SELECT user_id, ts, event_id, {cell} AS cell FROM events),
-        lagged AS (
-            SELECT cell AS to_cell,
-                   LAG(cell) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS from_cell
-            FROM pts),
-        trans AS (
-            SELECT from_cell, to_cell, COUNT(*) AS n
-            FROM lagged
-            WHERE from_cell IS NOT NULL AND from_cell != to_cell
-            GROUP BY 1, 2),
-        tot AS (SELECT from_cell, CAST(SUM(n) AS BIGINT) AS n_from
-                FROM trans GROUP BY 1)
-        SELECT t.from_cell, t.to_cell, t.n,
-               ROUND(t.n / CAST(o.n_from AS DOUBLE), 6) AS p, rk
-        FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY from_cell
-                       ORDER BY n DESC, to_cell ASC) AS rk
-            FROM trans) t
-        JOIN tot o ON t.from_cell = o.from_cell
-        WHERE rk <= 3
-        ORDER BY t.from_cell, rk
-    """
-
-
-# ---------------------------------------------------------------------------
-# span modality transition matrix (session 6, interleaved axis)
-# ---------------------------------------------------------------------------
-
-
-def q_span_transitions(spark, sf_dir):
-    """First-order Markov transition matrix over span KINDS in document
-    order — the interleaving fingerprint of the corpus (how often a header
-    is followed by text, text by an image, ...). Built ARRAY-side from the
-    ordered spans column (adjacent-kind pairs via transform — offset order
-    is the array order by construction); one partial+final agg; transition
-    probabilities are exact count ratios. Oracle: per-doc kind sequences
-    from the pure-Python generator twin as VALUES, aggregated
-    independently."""
-    from raptor_service_spark.datagen import gen_documents_df
-
-    docs = gen_documents_df(spark, 200, seed=63)
-    # Guard: Spark's sequence(1, 0) DESCENDS ([1, 0]) instead of being empty,
-    # so a single-span doc must be filtered out before the transform (the
-    # DuckDB oracle's generate_series(2, 1) is empty; parity requires this).
-    pairs = docs.filter(F.expr("size(spans) >= 2")).select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(spans) - 1), "
-                "i -> concat(spans[i - 1].kind, '>', spans[i].kind))"
-            )
-        ).alias("tr")
-    )
-    cnt = pairs.groupBy("tr").agg(F.count(F.lit(1)).alias("n"))
-    tot = (
-        cnt.withColumn("from_kind", F.substring_index("tr", ">", 1))
-        .groupBy("from_kind")
-        .agg(F.sum("n").alias("n_from"))
-    )
-    return (
-        cnt.withColumn("from_kind", F.substring_index("tr", ">", 1))
-        .withColumn("to_kind", F.substring_index("tr", ">", -1))
-        .join(F.broadcast(tot), "from_kind")
-        .select(
-            "from_kind",
-            "to_kind",
-            "n",
-            F.round(F.col("n") / F.col("n_from").cast("double"), 6).alias("p"),
-        )
-        .orderBy("from_kind", "to_kind")
-    )
-
-
-def _span_transitions_sql(n_docs: int = 200, seed: int = 63) -> str:
-    from raptor_service_spark.datagen import _gen_doc
-
-    vals = []
-    for i in range(n_docs):
-        d = _gen_doc(seed, i)
-        kinds = ",".join(s["kind"] for s in d["spans"])
-        vals.append(f"('{kinds}')")
-    return f"""
-        WITH d AS (SELECT string_split(kinds, ',') AS ks
-                   FROM (VALUES {', '.join(vals)}) t(kinds)),
-        pairs AS (
-            SELECT unnest(list_transform(generate_series(2, len(ks)),
-                          i -> ks[i - 1] || '>' || ks[i])) AS tr
-            FROM d),
-        cnt AS (SELECT tr, COUNT(*) AS n FROM pairs GROUP BY 1),
-        tot AS (SELECT split_part(tr, '>', 1) AS from_kind,
-                       CAST(SUM(n) AS BIGINT) AS n_from
-                FROM cnt GROUP BY 1)
-        SELECT t.from_kind, split_part(c.tr, '>', 2) AS to_kind, c.n,
-               ROUND(c.n / CAST(t.n_from AS DOUBLE), 6) AS p
-        FROM cnt c JOIN tot t ON split_part(c.tr, '>', 1) = t.from_kind
-        ORDER BY t.from_kind, to_kind
-    """
-
-
-# ---------------------------------------------------------------------------
-# standard deviational ellipse + Knox space-time test (session 6)
-# ---------------------------------------------------------------------------
-
-
-def q_deviational_ellipse(spark, sf_dir):
-    """Standard deviational ellipse (directional distribution) of the event
-    cloud: mean center, orientation θ of the major axis, and the two axis
-    standard deviations — the one-row summary GIS suites print for any
-    point layer. Closed-form from second moments (one scalar agg, 9-dp
-    pre-rounded sums; the rotation is the eigendecomposition of the 2×2
-    covariance, written out so both engines run the identical arithmetic):
-
-        θ = atan2(2·Sxy, Sxx − Syy) / 2
-        σ1,2 = sqrt((Sxx + Syy)/2 ± sqrt(((Sxx − Syy)/2)² + Sxy²))
-    """
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(lng.alias("x"), lat.alias("y"))
-    mom = pts.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.round(F.sum("x"), 9).alias("sx"),
-        F.round(F.sum("y"), 9).alias("sy"),
-        F.round(F.sum(F.col("x") * F.col("x")), 9).alias("sxx"),
-        F.round(F.sum(F.col("y") * F.col("y")), 9).alias("syy"),
-        F.round(F.sum(F.col("x") * F.col("y")), 9).alias("sxy"),
-    )
-    mx, my = F.col("sx") / F.col("n"), F.col("sy") / F.col("n")
-    cxx = F.col("sxx") / F.col("n") - mx * mx
-    cyy = F.col("syy") / F.col("n") - my * my
-    cxy = F.col("sxy") / F.col("n") - mx * my
-    half = (cxx - cyy) / F.lit(2.0)
-    root = F.sqrt(half * half + cxy * cxy)
-    mid = (cxx + cyy) / F.lit(2.0)
-    return mom.select(
-        F.col("n").cast("long").alias("n_points"),
-        F.round(mx, 6).alias("center_x"),
-        F.round(my, 6).alias("center_y"),
-        F.round(F.atan2(F.lit(2.0) * cxy, cxx - cyy) / F.lit(2.0), 6).alias(
-            "theta"
-        ),
-        F.round(F.sqrt(mid + root), 6).alias("sigma_major"),
-        F.round(F.sqrt(mid - root), 6).alias("sigma_minor"),
-    )
-
-
-def _deviational_ellipse_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    return f"""
-        WITH p AS (SELECT {lng} AS x, {lat} AS y FROM events),
-        mom AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                   ROUND(SUM(x), 9) AS sx, ROUND(SUM(y), 9) AS sy,
-                   ROUND(SUM(x * x), 9) AS sxx, ROUND(SUM(y * y), 9) AS syy,
-                   ROUND(SUM(x * y), 9) AS sxy
-            FROM p)
-        SELECT CAST(n AS BIGINT) AS n_points,
-               ROUND(sx / n, 6) AS center_x,
-               ROUND(sy / n, 6) AS center_y,
-               ROUND(ATAN2(2.0 * (sxy / n - (sx / n) * (sy / n)),
-                           (sxx / n - (sx / n) * (sx / n))
-                         - (syy / n - (sy / n) * (sy / n))) / 2.0, 6) AS theta,
-               ROUND(SQRT(((sxx / n - (sx / n) * (sx / n))
-                          + (syy / n - (sy / n) * (sy / n))) / 2.0
-                        + SQRT((((sxx / n - (sx / n) * (sx / n))
-                               - (syy / n - (sy / n) * (sy / n))) / 2.0)
-                              * (((sxx / n - (sx / n) * (sx / n))
-                               - (syy / n - (sy / n) * (sy / n))) / 2.0)
-                              + (sxy / n - (sx / n) * (sy / n))
-                              * (sxy / n - (sx / n) * (sy / n)))), 6)
-                   AS sigma_major,
-               ROUND(SQRT(((sxx / n - (sx / n) * (sx / n))
-                          + (syy / n - (sy / n) * (sy / n))) / 2.0
-                        - SQRT((((sxx / n - (sx / n) * (sx / n))
-                               - (syy / n - (sy / n) * (sy / n))) / 2.0)
-                              * (((sxx / n - (sx / n) * (sx / n))
-                               - (syy / n - (sy / n) * (sy / n))) / 2.0)
-                              + (sxy / n - (sx / n) * (sy / n))
-                              * (sxy / n - (sx / n) * (sy / n)))), 6)
-                   AS sigma_minor
-        FROM mom
-    """
-
-
-# ---------------------------------------------------------------------------
-# Knox space-time interaction test (session 6)
-# ---------------------------------------------------------------------------
-
-_KNOX_N, _KNOX_DELTA, _KNOX_TAU = 3000, 4.0, 3600
-
-
-def q_knox_test(spark, sf_dir):
-    """Knox space-time interaction: are events that are close in SPACE also
-    disproportionately close in TIME (disease-surveillance / incident-
-    clustering screen)? X = pairs within δ AND τ; under independence
-    E[X] = S·T / P with S space-close pairs, T time-close pairs, P all
-    pairs (closed form). Ratio ≫ 1 ⇒ interaction.
-
-    Scale shape: S and X come from ONE grid ε-join (each pair once,
-    carrying timestamps); T from the 1-D analog — a τ-bucket join with
-    ±1-bucket explode and canonical pair dedup; P is arithmetic. No
-    all-pairs join anywhere; the oracle is the brute-force quadratic."""
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts")
-        .filter(F.col("event_id") < _KNOX_N)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    pts = ev.select(
-        F.col("event_id").alias("id"),
-        ts_us.alias("t_us"),
-        lat.alias("lat"),
-        lng.alias("lng"),
-    )
-    sp = within_distance_join(pts, pts, eps=_KNOX_DELTA).filter(
-        F.col("l.id") < F.col("r.id")
-    )
-    tau_us = _KNOX_TAU * 1_000_000
-    s_x = sp.agg(
-        F.count(F.lit(1)).alias("s_pairs"),
-        F.sum(
-            (F.abs(F.col("l.t_us") - F.col("r.t_us")) <= tau_us).cast("long")
-        ).alias("x_pairs"),
-    )
-    a = pts.select("id", "t_us", F.floor(F.col("t_us") / tau_us).alias("k"))
-    b = a.select(
-        F.col("id").alias("id_b"),
-        F.col("t_us").alias("t_b"),
-        F.explode(
-            F.array(F.col("k") - 1, F.col("k"), F.col("k") + 1)
-        ).alias("k"),
-    )
-    t_cnt = (
-        a.join(b, "k")
-        .filter(F.col("id") < F.col("id_b"))
-        .filter(F.abs(F.col("t_us") - F.col("t_b")) <= tau_us)
-        .select(
-            F.least("id", "id_b").alias("pa"), F.greatest("id", "id_b").alias("pb")
-        )
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("t_pairs"))
-    )
-    n_tot = pts.agg(F.count(F.lit(1)).alias("n"))
-    p = (F.col("n") * (F.col("n") - 1) / F.lit(2)).cast("double")
-    e_x = F.col("s_pairs") * F.col("t_pairs") / p
-    return (
-        s_x.crossJoin(F.broadcast(t_cnt))
-        .crossJoin(F.broadcast(n_tot))
-        .select(
-            "n",
-            "s_pairs",
-            "t_pairs",
-            "x_pairs",
-            F.round(e_x, 6).alias("e_x"),
-            F.round(F.col("x_pairs") / e_x, 6).alias("knox_ratio"),
-        )
-    )
-
-
-def _knox_test_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    tau_us = _KNOX_TAU * 1_000_000
-    return f"""
-        WITH p AS (
-            SELECT event_id AS id, epoch_us(ts) AS t_us,
-                   {lat} AS lat, {lng} AS lng
-            FROM events WHERE event_id < {_KNOX_N}),
-        pr AS (
-            SELECT ROUND(SQRT((a.lat - b.lat) * (a.lat - b.lat)
-                            + (a.lng - b.lng) * (a.lng - b.lng)), 6) AS dist,
-                   ABS(a.t_us - b.t_us) AS dt_us
-            FROM p a JOIN p b ON a.id < b.id),
-        agg AS (
-            SELECT COUNT(CASE WHEN dist <= {_KNOX_DELTA!r} THEN 1 END)
-                       AS s_pairs,
-                   COUNT(CASE WHEN dt_us <= {tau_us} THEN 1 END) AS t_pairs,
-                   COUNT(CASE WHEN dist <= {_KNOX_DELTA!r}
-                              AND dt_us <= {tau_us} THEN 1 END) AS x_pairs,
-                   (SELECT COUNT(*) FROM p) AS n
-            FROM pr)
-        SELECT n, CAST(s_pairs AS BIGINT) AS s_pairs,
-               CAST(t_pairs AS BIGINT) AS t_pairs,
-               CAST(x_pairs AS BIGINT) AS x_pairs,
-               ROUND(s_pairs * t_pairs
-                     / CAST(n * (n - 1) / 2 AS DOUBLE), 6) AS e_x,
-               ROUND(x_pairs / (s_pairs * t_pairs
-                     / CAST(n * (n - 1) / 2 AS DOUBLE)), 6) AS knox_ratio
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# bivariate cross-K (session 6)
-# ---------------------------------------------------------------------------
-
-_XK_BANDS = [1.0, 2.0, 4.0]
-
-
-def q_cross_k(spark, sf_dir):
-    """Bivariate Ripley cross-K between click and purchase events: does
-    one type spatially attract the other beyond chance (K_AB above π·d²)?
-    One grid ε-join at the widest band produces every cross pair exactly
-    once; bands are conditional sums over that stream
-    (operators/spatial_stats.py:cross_k)."""
-    from raptor_service_spark.operators.spatial_stats import cross_k
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select("event_id", "event_type", lat.alias("lat"), lng.alias("lng"))
-    a = pts.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("id"), "lat", "lng"
-    )
-    b = pts.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("id"), "lat", "lng"
-    )
-    return cross_k(a, b, _XK_BANDS)
-
-
-def _cross_k_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import cross_k_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return cross_k_sql(
-        "(SELECT * FROM events WHERE event_type = 'click')",
-        "(SELECT * FROM events WHERE event_type = 'purchase')",
-        "event_id",
-        "event_id",
-        lat,
-        lng,
-        _XK_BANDS,
-    )
-
-
-# ---------------------------------------------------------------------------
-# quadrat-count CSR test + hourly autocorrelation (session 6)
-# ---------------------------------------------------------------------------
-
-
-def q_quadrat_csr(spark, sf_dir):
-    """Quadrat-count test of complete spatial randomness: partition the
-    world into res-3 quadrats, compare observed per-quadrat counts with
-    the uniform expectation via the χ² index of dispersion (VMR ≫ 1 ⇔
-    clustered). ALL res-3 quadrats count — including empty ones, whose
-    number is known in closed form (2^res·2^res) — so the statistic is the
-    textbook one without materializing empty cells. One point shuffle;
-    scalars after."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    res = 3
-    n_cells = (1 << res) * (1 << res)
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    occ = (
-        ev.select(cell_encode_col(lat, lng, res).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    # chi2 = sum_cells (x - m)^2 / m over ALL cells; empty cells each
-    # contribute m, so chi2 = sum_occ((x-m)^2)/m + (n_cells - occ) * m
-    # with m = N / n_cells. All terms exact rationals of integers.
-    return occ.agg(
-        F.sum("x").alias("n_points"), F.count(F.lit(1)).alias("n_occ"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    ).select(
-        "n_points",
-        F.lit(n_cells).cast("long").alias("n_quadrats"),
-        "n_occ",
-        F.round(
-            (F.col("sxx") - F.lit(2.0) * F.col("n_points") * F.col("n_points")
-             / F.lit(n_cells)
-             + F.col("n_occ") * (F.col("n_points") / F.lit(n_cells))
-             * (F.col("n_points") / F.lit(n_cells)))
-            / (F.col("n_points") / F.lit(n_cells))
-            + (F.lit(n_cells) - F.col("n_occ"))
-            * (F.col("n_points") / F.lit(n_cells)),
-            6,
-        ).alias("chi2"),
-    )
-
-
-def _quadrat_csr_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    res = 3
-    n_cells = (1 << res) * (1 << res)
-    cell = cell_encode_sql(lat, lng, res)
-    return f"""
-        WITH occ AS (
-            SELECT {cell} AS cell, COUNT(*) AS x FROM events GROUP BY 1),
-        s AS (SELECT CAST(SUM(x) AS BIGINT) AS n_points,
-                     COUNT(*) AS n_occ,
-                     CAST(SUM(x * x) AS BIGINT) AS sxx
-              FROM occ)
-        SELECT n_points, CAST({n_cells} AS BIGINT) AS n_quadrats, n_occ,
-               ROUND(
-                 (sxx - 2.0 * n_points * n_points / {n_cells}
-                  + n_occ * (n_points / CAST({n_cells} AS DOUBLE))
-                  * (n_points / CAST({n_cells} AS DOUBLE)))
-                 / (n_points / CAST({n_cells} AS DOUBLE))
-                 + ({n_cells} - n_occ)
-                 * (n_points / CAST({n_cells} AS DOUBLE)), 6) AS chi2
-        FROM s
-    """
-
-
-_ACF_LAGS = 6
-
-
-def q_hourly_acf(spark, sf_dir):
-    """Autocorrelation function of the global hourly event-count series at
-    lags 1..6 — the seasonality screen (daily rhythm shows as a ridge at
-    the 24-lag harmonic; here short lags capture burst persistence). The
-    series is the AGGREGATED (hour, count) table; each lag is one
-    self-join on hour+lag; moments come from one scalar agg with 9-dp
-    pre-rounded sums. Missing hours count as zero via the dense hour
-    ladder (sequence explode between min and max hour)."""
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    occ = ev.select(hour.alias("h")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    span = occ.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = (
-        span.select(
-            F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("h")
-        )
-        .join(occ, "h", "left")
-        .select("h", F.coalesce("x", F.lit(0)).cast("double").alias("x"))
-    )
-    mom = dense.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.round(F.sum("x"), 9).alias("sx"),
-        F.round(F.sum(F.col("x") * F.col("x")), 9).alias("sxx"),
-    )
-    lags = spark.createDataFrame(
-        [(k,) for k in range(1, _ACF_LAGS + 1)], "lag long"
-    )
-    a = dense.select(F.col("h").alias("ha"), F.col("x").alias("xa"))
-    b = dense.select(F.col("h").alias("hb"), F.col("x").alias("xb"))
-    prods = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("hb") == F.col("ha") + F.col("lag"))
-        .groupBy("lag")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("npairs"),
-            F.round(F.sum(F.col("xa") * F.col("xb")), 9).alias("sxy"),
-        )
-    )
-    m = F.col("sx") / F.col("n")
-    var = F.col("sxx") / F.col("n") - m * m
-    return (
-        prods.crossJoin(F.broadcast(mom))
-        .select(
-            "lag",
-            F.round(
-                (F.col("sxy") / F.col("npairs") - m * m) / var, 6
-            ).alias("acf"),
-        )
-        .orderBy("lag")
-    )
-
-
-def _hourly_acf_sql() -> str:
-    return f"""
-        WITH occ AS (
-            SELECT CAST(FLOOR(epoch_us(ts) / 3600000000.0) AS BIGINT) AS h,
-                   COUNT(*) AS x
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM occ),
-        dense AS (
-            SELECT g.h, CAST(COALESCE(occ.x, 0) AS DOUBLE) AS x
-            FROM (SELECT unnest(generate_series(h0, h1)) AS h FROM span) g
-            LEFT JOIN occ ON g.h = occ.h),
-        mom AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                   ROUND(SUM(x), 9) AS sx,
-                   ROUND(SUM(x * x), 9) AS sxx
-            FROM dense),
-        prods AS (
-            SELECT l.lag, CAST(COUNT(*) AS DOUBLE) AS npairs,
-                   ROUND(SUM(a.x * b.x), 9) AS sxy
-            FROM (SELECT unnest(generate_series(1, {_ACF_LAGS})) AS lag) l
-            CROSS JOIN dense a
-            JOIN dense b ON b.h = a.h + l.lag
-            GROUP BY 1)
-        SELECT lag,
-               ROUND((sxy / npairs - (sx / n) * (sx / n))
-                     / (sxx / n - (sx / n) * (sx / n)), 6) AS acf
-        FROM prods CROSS JOIN mom
-        ORDER BY lag
-    """
-
-
-# ---------------------------------------------------------------------------
-# Huff gravity market-share model (session 6)
-# ---------------------------------------------------------------------------
-
-_HUFF_EPS = 8.0
-
-
-def q_huff_demand(spark, sf_dir):
-    """Huff gravity model: each event (consumer) splits its unit demand
-    over candidate documents (stores) within ε, proportionally to
-    attractiveness / distance² (attractiveness = n_chars); per-store
-    expected demand = Σ shares — the retail-catchment workhorse. Scale
-    shape: candidates come from the one-shuffle ε cell/ring equi-join
-    (never consumer × store); the per-event normalization is a window over
-    the bounded candidate group; demand is one partial+final agg. Top-20
-    stores by demand."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id")
-        .filter(F.col("event_id") < 4000)
-    )
-    lat_e, lng_e = _latlng_cols(F.col("event_id"))
-    epts = ev.withColumn("lat", lat_e).withColumn("lng", lng_e)
-    d = _read(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    lat_d, lng_d = _latlng_cols(F.col("doc_id"))
-    dpts = d.withColumn("lat", lat_d).withColumn("lng", lng_d)
-    pairs = within_distance_join(epts, dpts, eps=_HUFF_EPS).select(
-        F.col("l.event_id").alias("event_id"),
-        F.col("r.doc_id").alias("doc_id"),
-        F.col("r.n_chars").alias("a"),
-        "dist",
-    )
-    wgt = F.col("a") / F.greatest(
-        F.col("dist") * F.col("dist"), F.lit(0.000001)
-    )
-    w = Window.partitionBy("event_id")
-    # Repo convention: pre-round the per-pair share to 9 dp before the
-    # per-doc SUM so Spark-vs-DuckDB summation-order ulp noise cannot flip
-    # the 6-dp rounded demand on knife-edge values.
-    shares = pairs.withColumn("p", F.round(wgt / F.sum(wgt).over(w), 9))
-    return (
-        shares.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_reached"),
-            F.round(F.sum("p"), 6).alias("demand"),
-        )
-        .orderBy(F.col("demand").desc(), "doc_id")
-        .limit(20)
-    )
-
-
-def _huff_demand_sql() -> str:
-    lat_e, lng_e = _latlng_sql("event_id")
-    lat_d, lng_d = _latlng_sql("doc_id")
-    return f"""
-        WITH e AS (SELECT event_id, {lat_e} AS lat, {lng_e} AS lng
-                   FROM events WHERE event_id < 4000),
-        s AS (SELECT doc_id, n_chars, {lat_d} AS lat, {lng_d} AS lng
-              FROM documents),
-        pairs AS (
-            SELECT e.event_id, s.doc_id, s.n_chars AS a,
-                   ROUND(SQRT((e.lat - s.lat) * (e.lat - s.lat)
-                            + (e.lng - s.lng) * (e.lng - s.lng)), 6) AS dist
-            FROM e JOIN s
-              ON ROUND(SQRT((e.lat - s.lat) * (e.lat - s.lat)
-                          + (e.lng - s.lng) * (e.lng - s.lng)), 6)
-                 <= {_HUFF_EPS!r}),
-        shares AS (
-            SELECT doc_id,
-                   ROUND((a / GREATEST(dist * dist, 0.000001))
-                         / SUM(a / GREATEST(dist * dist, 0.000001))
-                             OVER (PARTITION BY event_id), 9) AS p
-            FROM pairs)
-        SELECT doc_id, COUNT(*) AS n_reached, ROUND(SUM(p), 6) AS demand
-        FROM shares GROUP BY 1
-        ORDER BY demand DESC, doc_id
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# fixed-threshold teleport flags (streaming twin's batch path) (session 6)
-# ---------------------------------------------------------------------------
-
-_TP_KMH = 1000000.0
-
-
-def q_teleport_flags(spark, sf_dir):
-    """Fixed-threshold teleport screen — the BATCH path of the stateful
-    streaming detector (`streaming/teleport.py`; stream==batch parity
-    pytest-asserted in tests/test_streaming_teleport.py). Top-20 fastest
-    flagged legs over the event anchors."""
-    from raptor_service_spark.streaming.teleport import teleport_batch
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        "user_id",
-        F.col("event_id").alias("pid"),
-        "ts",
-        lat.alias("lat"),
-        lng.alias("lng"),
-    )
-    return (
-        teleport_batch(pts, _TP_KMH)
-        .orderBy(F.col("speed_kmh").desc(), "pid")
-        .limit(20)
-        .select(
-            "user_id",
-            "pid",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
-            "speed_kmh",
-        )
-    )
-
-
-def _teleport_flags_sql() -> str:
-    from raptor_service_spark.geo.distance import haversine_sql
-
-    lat, lng = _latlng_sql("event_id")
-    hav = haversine_sql("plat", "plng", "lat", "lng")
-    return f"""
-        WITH pts AS (
-            SELECT user_id, event_id AS pid, ts, {lat} AS lat, {lng} AS lng
-            FROM events),
-        lagged AS (
-            SELECT user_id, pid, ts, lat, lng,
-                   LAG(lat) OVER (PARTITION BY user_id ORDER BY ts, pid) AS plat,
-                   LAG(lng) OVER (PARTITION BY user_id ORDER BY ts, pid) AS plng,
-                   (epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-                        PARTITION BY user_id ORDER BY ts, pid))
-                       / 3600000000.0 AS dt_h
-            FROM pts),
-        legs AS (
-            SELECT user_id, pid, ts, ROUND({hav} / dt_h, 6) AS speed_kmh
-            FROM lagged WHERE dt_h > 0)
-        SELECT user_id, pid,
-               strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s, speed_kmh
-        FROM legs WHERE speed_kmh > {_TP_KMH!r}
-        ORDER BY speed_kmh DESC, pid
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# BPE merge training (session 6)
+# BPE merge training
 # ---------------------------------------------------------------------------
 
 _BPE_ROUNDS = 5
@@ -8679,7 +2851,7 @@ def _bpe_merges_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# bigram LM perplexity (session 6)
+# bigram LM perplexity
 # ---------------------------------------------------------------------------
 
 
@@ -8763,216 +2935,8 @@ def _doc_bigram_ppl_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# G-function, mixture resampling, inter-arrival fit (session 6)
+# polygon-table point-in-polygon join
 # ---------------------------------------------------------------------------
-
-_GF_BANDS = [5.0, 6.0, 7.0, 8.0]
-
-
-def q_g_function(spark, sf_dir):
-    """Nearest-neighbor distance distribution G(d) — the empirical CDF of
-    per-point NN distances at fixed bands, the spacing companion to
-    Ripley's K (G above the CSR curve ⇔ clustered at that range). NN
-    distances come from the exact ring-doubling self-NN join; the band
-    evaluation is one broadcast ladder join over the aggregated NN table."""
-    from raptor_service_spark.operators.geo_knn import nn_distances
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(F.col("doc_id").alias("pid"), lng.alias("px"), lat.alias("py"))
-    nn = nn_distances(pts, res=5)
-    bands = spark.createDataFrame([(b,) for b in _GF_BANDS], "band double")
-    return (
-        nn.crossJoin(F.broadcast(bands))
-        .groupBy("band")
-        .agg(
-            F.sum((F.col("d1") <= F.col("band")).cast("long")).alias("n_le"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "band",
-            "n_le",
-            "n",
-            F.round(F.col("n_le") / F.col("n").cast("double"), 6).alias("g"),
-        )
-        .orderBy("band")
-    )
-
-
-def _g_function_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    bands = ", ".join(f"({b!r})" for b in _GF_BANDS)
-    return f"""
-        WITH p AS (SELECT doc_id AS pid, {lng} AS px, {lat} AS py FROM documents),
-        d AS (SELECT a.pid,
-                     MIN(SQRT((a.px - b.px) * (a.px - b.px)
-                            + (a.py - b.py) * (a.py - b.py))) AS d1
-              FROM p a JOIN p b ON a.pid != b.pid
-              GROUP BY 1)
-        SELECT band, CAST(SUM(CAST(d1 <= band AS INT)) AS BIGINT) AS n_le,
-               COUNT(*) AS n,
-               ROUND(SUM(CAST(d1 <= band AS INT)) / CAST(COUNT(*) AS DOUBLE), 6)
-                   AS g
-        FROM d CROSS JOIN (SELECT CAST(band AS DOUBLE) AS band FROM (VALUES {bands}) t(band)) b
-        GROUP BY band
-        ORDER BY band
-    """
-
-
-_MIX_TARGET = {"en": 0.5, "de": 1.0, "fr": 1.0, "es": 0.8, "zh": 0.6}
-
-
-def q_mixture_resample(spark, sf_dir):
-    """Deterministic mixture resampling for training-data curation:
-    down-sample each language to a target keep-rate via an md5-uniform
-    per-doc draw (stable under re-runs, appends, and repartitioning — the
-    same doc always gets the same verdict). One scan, one agg; the rate
-    map rides as a literal CASE expression. Reports kept/total per lang."""
-    rate = F.create_map(
-        *[F.lit(x) for kv in _MIX_TARGET.items() for x in kv]
-    )[F.col("lang")]
-    u = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-        .cast("double")
-        / F.lit(4294967296.0)
-    )
-    d = _read(spark, sf_dir, "documents").select("doc_id", "lang")
-    return (
-        d.withColumn("keep", (u < rate).cast("long"))
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("keep").alias("n_kept"),
-            F.round(F.sum("keep") / F.count(F.lit(1)).cast("double"), 6).alias(
-                "kept_frac"
-            ),
-        )
-        .orderBy("lang")
-    )
-
-
-def _mixture_resample_sql() -> str:
-    cases = " ".join(
-        f"WHEN '{k}' THEN {v!r}" for k, v in _MIX_TARGET.items()
-    )
-    return f"""
-        WITH d AS (
-            SELECT lang,
-                   CAST(('0x' || substr(md5('mix|' || CAST(doc_id AS VARCHAR)),
-                         1, 8))::BIGINT AS DOUBLE) / 4294967296.0 AS u,
-                   CASE lang {cases} END AS rate
-            FROM documents)
-        SELECT lang, COUNT(*) AS n_docs,
-               CAST(SUM(CAST(u < rate AS INT)) AS BIGINT) AS n_kept,
-               ROUND(SUM(CAST(u < rate AS INT)) / CAST(COUNT(*) AS DOUBLE), 6)
-                   AS kept_frac
-        FROM d GROUP BY 1 ORDER BY 1
-    """
-
-
-_DSIR_B = 256
-
-
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance weights (Xie et al. 2023, "Data Selection for
-    Language Models via Importance Resampling"): score every raw doc by
-    how target-like its hashed-feature distribution is — log w(doc) =
-    Σ_tokens [ln p̂_target(bucket) − ln p̂_raw(bucket)] over md5-hashed
-    unigram buckets (B=256, Laplace-smoothed). Target = the deterministic
-    'test' hash split (the same stable split train_decontam protects); the
-    top-scoring docs are what DSIR resamples into the training mixture.
-    (hash_split import is function-local like the other split consumers.)
-
-    Scale shape at 100 TB: the token stream is touched ONCE per role (two
-    partial+final bucket aggs — 256-row outputs); the per-feature
-    log-ratio table is a 256-row BROADCAST; the per-doc score is one
-    doc-keyed agg. No doc×doc work, no model inference. Float convention:
-    per-bucket log-ratio pre-rounded 9 dp (ln ulps differ across libm
-    implementations), per-doc sum rounded 6 dp."""
-    from raptor_service_spark.functions.text import hash_split
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    words = d.select(
-        "doc_id",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w"),
-    ).filter(F.col("w") != "")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10).cast("long")
-        % F.lit(_DSIR_B)
-    )
-    wb = words.select("doc_id", bucket.alias("b"), hash_split(F.col("doc_id")).alias("split"))
-    raw = wb.groupBy("b").agg(F.count(F.lit(1)).alias("cr"))
-    tgt = wb.filter(F.col("split") == "test").groupBy("b").agg(
-        F.count(F.lit(1)).alias("ct")
-    )
-    totals = wb.agg(
-        F.count(F.lit(1)).alias("nr"),
-        F.sum((F.col("split") == "test").cast("long")).alias("nt"),
-    )
-    feat = (
-        raw.join(tgt, "b", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "b",
-            F.round(
-                F.log(
-                    (F.coalesce("ct", F.lit(0)) + F.lit(1)).cast("double")
-                    / (F.col("nt") + F.lit(_DSIR_B)).cast("double")
-                )
-                - F.log(
-                    (F.col("cr") + F.lit(1)).cast("double")
-                    / (F.col("nr") + F.lit(_DSIR_B)).cast("double")
-                ),
-                9,
-            ).alias("lr"),
-        )
-    )
-    return (
-        wb.join(F.broadcast(feat), "b")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.sum("lr"), 6).alias("log_w"),
-        )
-        .orderBy(F.col("log_w").desc(), "doc_id")
-        .limit(20)
-    )
-
-
-def _dsir_weights_sql() -> str:
-    from raptor_service_spark.functions.text import hash_split_sql
-
-    split = hash_split_sql("doc_id")
-    return f"""
-        WITH words AS (
-            SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)),
-                   '\\s+')) AS w, {split} AS split
-            FROM documents),
-        wb AS (
-            SELECT doc_id, split,
-                   ('0x' || substr(md5(w), 1, 8))::BIGINT % {_DSIR_B} AS b
-            FROM words WHERE w != ''),
-        raw AS (SELECT b, COUNT(*) AS cr FROM wb GROUP BY 1),
-        tgt AS (SELECT b, COUNT(*) AS ct FROM wb WHERE split = 'test'
-                GROUP BY 1),
-        totals AS (
-            SELECT COUNT(*) AS nr,
-                   CAST(SUM(CASE WHEN split = 'test' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS nt
-            FROM wb),
-        feat AS (
-            SELECT raw.b,
-                   ROUND(LN(CAST(COALESCE(ct, 0) + 1 AS DOUBLE)
-                            / CAST(nt + {_DSIR_B} AS DOUBLE))
-                         - LN(CAST(cr + 1 AS DOUBLE)
-                              / CAST(nr + {_DSIR_B} AS DOUBLE)), 9) AS lr
-            FROM raw LEFT JOIN tgt ON raw.b = tgt.b CROSS JOIN totals)
-        SELECT doc_id, COUNT(*) AS n_tokens, ROUND(SUM(lr), 6) AS log_w
-        FROM wb JOIN feat ON wb.b = feat.b
-        GROUP BY 1
-        ORDER BY log_w DESC, doc_id
-        LIMIT 20
-    """
 
 
 _PIPT_RES, _PIPT_N, _PIPT_SEED = 5, 6, 72
@@ -9088,609 +3052,9 @@ def _pip_polygon_table_sql() -> str:
     """
 
 
-_PCA_DIM, _PCA_ROUNDS = 64, 8
-
-
-def q_pca_top_component(spark, sf_dir):
-    """Top principal component of the embedding table by POWER ITERATION —
-    the dimensionality audit an embedding pipeline runs (anisotropy /
-    matryoshka-truncation checks; Arora et al.'s 'common discourse vector'
-    removal uses exactly this vector). Three stages, all distributed:
-
-      1. moments — ONE mapInPandas pass emits per-Arrow-batch partial
-         (n, Σx[64], Σxxᵀ[4096]) rows (the block outer-product form — at
-         100 TB the shuffle carries O(partitions) rows of 4 KB, never a
-         64×-exploded corpus); partials reduce via one posexplode + agg;
-         the reduced moment sums are ROUNDED AT 5 dp — magnitudes are
-         O(n·0.015), so the grid dwarfs fold-order ulp noise by ~10⁹ and
-         every downstream value becomes a pure function of identical
-         inputs on both engines (a bare 9-dp round on the CANCELLING
-         covariance subtraction measurably flipped knife edges ~4%/run).
-      2. covariance — C[i,j] = g/n − (s_i/n)(s_j/n) with NO rounding:
-         exact IEEE ops on bit-identical rounded moments are themselves
-         bit-identical across engines; rounding here would quantize onto
-         a lattice whose next-stage sums land EXACTLY on half boundaries,
-         where engine rounding implementations legitimately disagree (the
-         failure mode this operator's first draft hit).
-      3. iteration — 8 unrolled power rounds RELATIONALLY on (i, j, c):
-         w = ROUND(C·v, 9) (the only fold-order-sensitive sums), ‖w‖ =
-         ROUND(sqrt(Σw²), 9) (sqrt de-lattices), v = w/‖w‖ EXACT (pure
-         function of identical inputs — rounding v would re-lattice the
-         next round's products); start v₀ = 1/√dim. The DuckDB twin
-         unrolls the same rounds as MATERIALIZED CTEs.
-
-    Output: the 64 loadings of the principal axis + the Rayleigh
-    eigenvalue estimate, both 6 dp (computed from the final w via a fresh
-    sqrt, never by re-rounding a 9-dp value — a 9-dp lattice point can sit
-    exactly on a 6-dp half boundary)."""
-    e = _read(spark, sf_dir, "embeddings").select(
-        F.col("embedding").cast("array<double>").alias("v")
-    )
-    dim = _PCA_DIM
-
-    def gram(batches):
-        import pandas as pd
-
-        for b in batches:
-            if not len(b):
-                continue
-            mat = np.array(b["v"].tolist(), dtype=np.float64)
-            yield pd.DataFrame(
-                {
-                    "n": [len(mat)],
-                    "s": [mat.sum(axis=0).tolist()],
-                    "g": [(mat.T @ mat).reshape(-1).tolist()],
-                }
-            )
-
-    partials = e.mapInPandas(
-        gram, "n long, s array<double>, g array<double>"
-    )
-    tot = partials.agg(F.sum("n").alias("n"))
-    s_tab = (
-        partials.select(F.posexplode("s").alias("i", "x"))
-        .groupBy("i")
-        .agg(F.round(F.sum("x"), 5).alias("s"))
-    )
-    g_tab = (
-        partials.select(F.posexplode("g").alias("k", "x"))
-        .groupBy("k")
-        .agg(F.round(F.sum("x"), 5).alias("g"))
-        .select(
-            (F.col("k") / dim).cast("int").alias("i"),
-            (F.col("k") % dim).cast("int").alias("j"),
-            "g",
-        )
-    )
-    cov = (
-        g_tab.join(s_tab.select(F.col("i"), F.col("s").alias("si")), "i")
-        .join(s_tab.select(F.col("i").alias("j"), F.col("s").alias("sj")), "j")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "i",
-            "j",
-            (
-                F.col("g") / F.col("n")
-                - (F.col("si") / F.col("n")) * (F.col("sj") / F.col("n"))
-            ).alias("c"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    v0 = float(1.0 / np.sqrt(dim))
-    # per-round: ONE small agg job over the cached 4096-row cov table with
-    # the current v as a literal array (no join, no per-round checkpoint —
-    # a fully lazy 8-round plan cost 3x more in Catalyst re-analysis, and
-    # eager per-round checkpoints 2x in scheduler round-trips; measured).
-    # The norm is rounded on the driver with BigDecimal-identical HALF_UP
-    # (Decimal on the shortest repr — the teleport codec technique);
-    # division is an exact IEEE op, so v stays bit-identical to an
-    # in-engine formulation.
-    import math as _math
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def _r9(x: float) -> float:
-        return float(Decimal(repr(x)).quantize(Decimal("0.000000001"), ROUND_HALF_UP))
-
-    v = [v0] * dim
-    lam_raw = 0.0
-    for _ in range(_PCA_ROUNDS):
-        lit = F.array(*[F.lit(float(x)) for x in v])
-        rows = (
-            cov.groupBy("i")
-            .agg(
-                F.round(
-                    F.sum(F.col("c") * F.element_at(lit, F.col("j") + 1)), 9
-                ).alias("w")
-            )
-            .collect()
-        )
-        wmap = {r.i: r.w for r in rows}
-        ws = [wmap.get(i, 0.0) for i in range(dim)]
-        s2 = 0.0
-        for x in ws:  # fixed i-order fold; 9-dp round absorbs the oracle's
-            s2 += x * x  # arbitrary-order SUM
-        lam_raw = _math.sqrt(s2)
-        nrm = _r9(lam_raw)
-        v = [x / nrm for x in ws]
-    out = spark.createDataFrame(
-        [(int(i), float(x)) for i, x in enumerate(v)], "i long, v double"
-    )
-    return out.select(
-        "i",
-        F.round("v", 6).alias("loading"),
-        F.round(F.lit(float(lam_raw)), 6).alias("eigenvalue"),
-    ).orderBy("i")
-
-
-def _pca_top_component_sql() -> str:
-    dim, rounds = _PCA_DIM, _PCA_ROUNDS
-    v0 = float(1.0 / np.sqrt(dim))
-    steps = []
-    for t in range(1, rounds + 1):
-        steps.append(
-            f"""w{t} AS (
-            SELECT c.i, ROUND(SUM(c.c * v.v), 9) AS w
-            FROM cov c JOIN v{t - 1} v ON c.j = v.j
-            GROUP BY c.i),
-        n{t} AS (SELECT ROUND(SQRT(SUM(w * w)), 9) AS nrm FROM w{t}),
-        v{t} AS MATERIALIZED (
-            SELECT i AS j, w / nrm AS v
-            FROM w{t} CROSS JOIN n{t})"""
-        )
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        tot AS (SELECT COUNT(*) AS n FROM e),
-        el AS MATERIALIZED (
-            SELECT t.i - 1 AS i, v[t.i] AS x
-            FROM e CROSS JOIN (SELECT unnest(generate_series(1, {dim})) AS i) t),
-        s_tab AS MATERIALIZED (SELECT i, ROUND(SUM(x), 5) AS s FROM el GROUP BY 1),
-        g_tab AS MATERIALIZED (
-            SELECT t1.i - 1 AS i, t2.j - 1 AS j,
-                   ROUND(SUM(v[t1.i] * v[t2.j]), 5) AS g
-            FROM e
-            CROSS JOIN (SELECT unnest(generate_series(1, {dim})) AS i) t1
-            CROSS JOIN (SELECT unnest(generate_series(1, {dim})) AS j) t2
-            GROUP BY 1, 2),
-        cov AS MATERIALIZED (
-            SELECT g.i, g.j,
-                   g.g / t.n - (si.s / t.n) * (sj.s / t.n) AS c
-            FROM g_tab g
-            JOIN s_tab si ON si.i = g.i
-            JOIN s_tab sj ON sj.i = g.j
-            CROSS JOIN tot t),
-        v0 AS (SELECT unnest(generate_series(0, {dim - 1})) AS j, {v0!r} AS v),
-        {chain}
-        SELECT v.j AS i, ROUND(v.v, 6) AS loading, lam.eigenvalue
-        FROM v{rounds} v CROSS JOIN
-             (SELECT ROUND(SQRT(SUM(w * w)), 6) AS eigenvalue
-              FROM w{rounds}) lam
-        ORDER BY i
-    """
-
-
-_HRW_SHARDS = 8
-
-
-def q_rendezvous_shards(spark, sf_dir):
-    """Rendezvous (highest-random-weight) sharding — the stable document →
-    shard assignment a 100 TB pipeline uses so that adding/removing one
-    worker moves ONLY that worker's documents (consistent-hashing
-    guarantee, Thaler & Ravishankar 1996). weight(doc, s) = md5(doc|s);
-    shard = argmax. Reports per-shard counts plus, per shard, how many of
-    its docs would RE-assign to it if shard 0 left — the minimal-disruption
-    property as data: only shard-0 docs move, and they spread by the same
-    argmax over the survivors. One scan, one agg; the argmax over the
-    8-way literal weights is pure codegen (no shuffle before
-    the count agg)."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-
-    def wgt(s):
-        return F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(f"|{s}")))
-
-    def argmax(shards):
-        # max over (weight, shard) structs; md5 collisions impossible at
-        # corpus scale, shard id breaks the tie deterministically anyway
-        return F.array_max(
-            F.array(
-                *[
-                    F.struct(wgt(s).alias("w"), F.lit(s).alias("s"))
-                    for s in shards
-                ]
-            )
-        ).getField("s")
-
-    full = argmax(range(_HRW_SHARDS))
-    without0 = argmax(range(1, _HRW_SHARDS))
-    return (
-        d.select(full.alias("shard"), without0.alias("shard_minus0"))
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum((F.col("shard") != F.col("shard_minus0")).cast("long")).alias(
-                "n_moved_if_0_leaves"
-            ),
-        )
-        .orderBy("shard")
-    )
-
-
-def _rendezvous_shards_sql() -> str:
-    def wgt(s):
-        return f"md5(CAST(doc_id AS VARCHAR) || '|{s}')"
-
-    def argmax(shards):
-        structs = ", ".join(
-            f"{{'w': {wgt(s)}, 's': {s}}}" for s in shards
-        )
-        return f"list_max([{structs}]).s"
-
-    full = argmax(range(_HRW_SHARDS))
-    without0 = argmax(range(1, _HRW_SHARDS))
-    return f"""
-        WITH a AS (
-            SELECT {full} AS shard, {without0} AS shard_minus0
-            FROM documents)
-        SELECT shard, COUNT(*) AS n_docs,
-               CAST(SUM(CASE WHEN shard != shard_minus0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_moved_if_0_leaves
-        FROM a GROUP BY 1 ORDER BY 1
-    """
-
-
-def q_interarrival_fit(spark, sf_dir):
-    """Exponential fit + one-sample KS distance for per-user event
-    inter-arrival times (whole-second gaps): λ̂ = 1/mean from exact integer
-    sums, then D = sup over the value HISTOGRAM of the two-sided gap
-    between the empirical CDF and 1−exp(−λx). The burstiness screen for
-    event streams (KS far above ~1.36/√n ⇒ not Poisson). Scale shape: one
-    user window builds gaps; everything after runs on the O(distinct
-    seconds) histogram (quantization bounds the cumulative window)."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap = F.floor((ts_us - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))) / F.lit(1000000.0)).cast("long")
-    gaps = (
-        ev.withColumn("gap_s", gap)
-        .filter(F.col("gap_s").isNotNull() & (F.col("gap_s") >= 0))
-        .select("gap_s")
-    )
-    hist = gaps.groupBy("gap_s").agg(F.count(F.lit(1)).alias("c"))
-    tot = hist.agg(
-        F.sum("c").alias("n"), F.sum(F.col("gap_s") * F.col("c")).alias("s")
-    )
-    wc = Window.orderBy("gap_s").rowsBetween(Window.unboundedPreceding, 0)
-    cum = hist.withColumn("cum", F.sum("c").over(wc))
-    lam = F.col("n").cast("double") / F.col("s").cast("double")
-    cdf = F.lit(1.0) - F.exp(-lam * F.col("gap_s").cast("double"))
-    ks_at = F.greatest(
-        F.abs(F.col("cum").cast("double") / F.col("n") - cdf),
-        F.abs((F.col("cum") - F.col("c")).cast("double") / F.col("n") - cdf),
-    )
-    return (
-        cum.crossJoin(F.broadcast(tot))
-        .agg(
-            F.max("n").alias("n_gaps"),
-            F.round(F.max(lam), 9).alias("lambda_hat"),
-            F.round(F.max(ks_at), 6).alias("ks_dist"),
-        )
-        .select(
-            "n_gaps",
-            F.round(F.col("lambda_hat"), 6).alias("lambda_hat"),
-            "ks_dist",
-        )
-    )
-
-
-def _interarrival_fit_sql() -> str:
-    return """
-        WITH gaps AS (
-            SELECT CAST(FLOOR((epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id))
-                       / 1000000.0) AS BIGINT) AS gap_s
-            FROM events
-            QUALIFY gap_s IS NOT NULL AND gap_s >= 0),
-        hist AS (SELECT gap_s, COUNT(*) AS c FROM gaps GROUP BY 1),
-        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n,
-                       CAST(SUM(gap_s * c) AS BIGINT) AS s FROM hist),
-        cum AS (SELECT gap_s, c,
-                       SUM(c) OVER (ORDER BY gap_s
-                           ROWS UNBOUNDED PRECEDING) AS cum
-                FROM hist)
-        SELECT MAX(n) AS n_gaps,
-               ROUND(ROUND(MAX(CAST(n AS DOUBLE) / s), 9), 6) AS lambda_hat,
-               ROUND(MAX(GREATEST(
-                   ABS(CAST(cum AS DOUBLE) / n
-                       - (1.0 - EXP(-(CAST(n AS DOUBLE) / s)
-                                    * CAST(gap_s AS DOUBLE)))),
-                   ABS(CAST(cum - c AS DOUBLE) / n
-                       - (1.0 - EXP(-(CAST(n AS DOUBLE) / s)
-                                    * CAST(gap_s AS DOUBLE)))))), 6) AS ks_dist
-        FROM cum CROSS JOIN tot
-    """
-
-
 # ---------------------------------------------------------------------------
-# k-DOP directional hulls per region (session 6)
+# corpus statistics: Zipf slope
 # ---------------------------------------------------------------------------
-
-_DOP_D = 8
-
-
-def _dop_dirs() -> list[tuple[float, float]]:
-    import math
-
-    return [
-        (math.cos(2 * math.pi * i / _DOP_D), math.sin(2 * math.pi * i / _DOP_D))
-        for i in range(_DOP_D)
-    ]
-
-
-def q_cluster_hulls(spark, sf_dir):
-    """Per-region k-DOP hull (discrete-orientation convex approximation):
-    for each res-2 document cell with >= 20 points, the 8 directional
-    extreme points (argmax of x·cosθ + y·sinθ), chained by direction into
-    a polygon whose shoelace area approximates the cluster's convex-hull
-    footprint. One agg pass — no sort, no iteration, no pairwise work:
-    each extreme is a max(struct) with a deterministic larger-id
-    tie-break, identical in both engines; the area is a FIXED arithmetic
-    expression over the 8 extremes (same op order both engines). The
-    scalable stand-in for exact convex hulls at 100 TB (k-DOP bounding
-    volumes)."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(
-        "doc_id",
-        lng.alias("x"),
-        lat.alias("y"),
-        cell_encode_col(lat, lng, 2).alias("cell"),
-    )
-    aggs = [F.count(F.lit(1)).alias("n_points")]
-    for i, (c, s) in enumerate(_dop_dirs()):
-        proj = F.col("x") * F.lit(c) + F.col("y") * F.lit(s)
-        aggs.append(
-            F.max(F.struct(proj.alias("p"), F.col("doc_id").alias("pid"),
-                           F.col("x").alias("hx"), F.col("y").alias("hy"))
-                  ).alias(f"m{i}")
-        )
-    g = pts.groupBy("cell").agg(*aggs).filter(F.col("n_points") >= 20)
-    shoelace = None
-    for i in range(_DOP_D):
-        j = (i + 1) % _DOP_D
-        term = (
-            F.col(f"m{i}.hx") * F.col(f"m{j}.hy")
-            - F.col(f"m{j}.hx") * F.col(f"m{i}.hy")
-        )
-        shoelace = term if shoelace is None else shoelace + term
-    return g.select(
-        "cell",
-        "n_points",
-        F.round(F.abs(shoelace) / F.lit(2.0), 6).alias("hull_area"),
-    ).orderBy("cell")
-
-
-def _cluster_hulls_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql("y", "x", 2)
-    sel = ["COUNT(*) AS n_points"]
-    for i, (c, s) in enumerate(_dop_dirs()):
-        sel.append(
-            f"MAX(struct_pack(p := x * {c!r} + y * {s!r}, pid := doc_id, "
-            f"hx := x, hy := y)) AS m{i}"
-        )
-    terms = " + ".join(
-        f"((m{i}).hx * (m{(i + 1) % _DOP_D}).hy"
-        f" - (m{(i + 1) % _DOP_D}).hx * (m{i}).hy)"
-        for i in range(_DOP_D)
-    )
-    return f"""
-        WITH p AS (SELECT doc_id, {lng} AS x, {lat} AS y FROM documents),
-        g AS (
-            SELECT {cell} AS cell, {', '.join(sel)}
-            FROM p GROUP BY 1)
-        SELECT cell, n_points,
-               ROUND(ABS({terms}) / 2.0, 6) AS hull_area
-        FROM g WHERE n_points >= 20
-        ORDER BY cell
-    """
-
-
-# ---------------------------------------------------------------------------
-# colocation quotient + Heaps'-law vocabulary growth (session 6)
-# ---------------------------------------------------------------------------
-
-_CLQ_N = 2000
-
-
-def q_colocation_quotient(spark, sf_dir):
-    """Colocation quotient CLQ(A→B) between event types: the share of
-    A-points whose nearest neighbor is type B, normalized by B's global
-    share — CLQ > 1 means A co-locates with B beyond chance (the
-    categorical point-pattern analog of cross-K). Nearest neighbors come
-    from the exact ring-doubling self-NN join (`operators/geo_knn.py:
-    nn_distances`, now carrying the neighbor's identity with a
-    deterministic min-id tie-break); the brute-force oracle proves both
-    the NN assignment and the quotient. Restricted to event_id < 2000 so
-    the O(n²) oracle stays cheap — the engine path is the same at any n."""
-    from raptor_service_spark.operators.geo_knn import nn_distances
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "event_type")
-        .filter(F.col("event_id") < _CLQ_N)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(F.col("event_id").alias("pid"), lng.alias("px"), lat.alias("py"))
-    nn = nn_distances(pts, res=6)
-    ta = ev.select(F.col("event_id").alias("pid"), F.col("event_type").alias("ta"))
-    tb = ev.select(
-        F.col("event_id").alias("nn_id"), F.col("event_type").alias("tb")
-    )
-    typed = nn.join(ta, "pid").join(tb, "nn_id")
-    per_a = typed.groupBy("ta", "tb").agg(F.count(F.lit(1)).alias("c"))
-    na = F.broadcast(
-        ev.groupBy(F.col("event_type").alias("ta")).agg(
-            F.count(F.lit(1)).alias("n_a")
-        )
-    )
-    nb = F.broadcast(
-        ev.groupBy(F.col("event_type").alias("tb")).agg(
-            F.count(F.lit(1)).alias("n_b")
-        )
-    )
-    tot = F.broadcast(ev.agg(F.count(F.lit(1)).alias("n")))
-    return (
-        per_a.join(na, "ta")
-        .join(nb, "tb")
-        .crossJoin(tot)
-        .select(
-            "ta",
-            "tb",
-            "c",
-            F.round(
-                (F.col("c") / F.col("n_a"))
-                / (F.col("n_b") / (F.col("n") - F.lit(1.0))),
-                6,
-            ).alias("clq"),
-        )
-        .orderBy("ta", "tb")
-    )
-
-
-def _colocation_quotient_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    return f"""
-        WITH e AS (SELECT event_id, event_type, {lng} AS px, {lat} AS py
-                   FROM events WHERE event_id < {_CLQ_N}),
-        nn AS (
-            SELECT a.event_id AS pid, b.event_id AS nn_id
-            FROM e a JOIN e b ON a.event_id != b.event_id
-            QUALIFY ROW_NUMBER() OVER (
-                PARTITION BY a.event_id
-                ORDER BY SQRT((a.px - b.px) * (a.px - b.px)
-                            + (a.py - b.py) * (a.py - b.py)), b.event_id) = 1),
-        typed AS (
-            SELECT ea.event_type AS ta, eb.event_type AS tb
-            FROM nn JOIN e ea ON nn.pid = ea.event_id
-                    JOIN e eb ON nn.nn_id = eb.event_id),
-        per_a AS (SELECT ta, tb, COUNT(*) AS c FROM typed GROUP BY 1, 2),
-        na AS (SELECT event_type AS ta, COUNT(*) AS n_a FROM e GROUP BY 1),
-        nb AS (SELECT event_type AS tb, COUNT(*) AS n_b FROM e GROUP BY 1),
-        tot AS (SELECT COUNT(*) AS n FROM e)
-        SELECT p.ta, p.tb, p.c,
-               ROUND((p.c / CAST(na.n_a AS DOUBLE))
-                     / (nb.n_b / (tot.n - 1.0)), 6) AS clq
-        FROM per_a p JOIN na ON p.ta = na.ta JOIN nb ON p.tb = nb.tb
-        CROSS JOIN tot
-        ORDER BY p.ta, p.tb
-    """
-
-
-def q_heaps_law(spark, sf_dir):
-    """Heaps'-law vocabulary growth: distinct vocabulary size after the
-    first k documents (k on a doubling ladder), plus the log-log OLS
-    exponent β (natural text β ≈ 0.4-0.6; templated corpora saturate).
-    Scale shape: first-occurrence doc per term is ONE min-agg over the
-    term stream; the cumulative curve is a broadcast ladder join over the
-    O(vocab) aggregated table — points are never re-scanned per k."""
-    d = _read(spark, sf_dir, "documents")
-    from raptor_service_spark.operators.dedup import words_col
-
-    first = (
-        d.select("doc_id", F.explode(words_col(F.col("text"))).alias("term"))
-        .groupBy("term")
-        .agg(F.min("doc_id").alias("first_doc"))
-    )
-    ks = [25, 50, 100, 200, 400]
-    ladder = spark.createDataFrame([(k,) for k in ks], "k long")
-    curve = (
-        first.crossJoin(F.broadcast(ladder))
-        .filter(F.col("first_doc") < F.col("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("vocab"))
-    )
-    xy = curve.select(
-        "k",
-        "vocab",
-        F.log(F.col("k").cast("double")).alias("x"),
-        F.log(F.col("vocab").cast("double")).alias("y"),
-    )
-    sums = xy.agg(
-        F.count(F.lit(1)).cast("double").alias("m"),
-        F.round(F.sum("x"), 9).alias("sx"),
-        F.round(F.sum("y"), 9).alias("sy"),
-        F.round(F.sum(F.col("x") * F.col("x")), 9).alias("sxx"),
-        F.round(F.sum(F.col("x") * F.col("y")), 9).alias("sxy"),
-    )
-    beta = (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    return (
-        xy.select("k", "vocab")
-        .crossJoin(F.broadcast(sums.select(F.round(beta, 6).alias("heaps_beta"))))
-        .orderBy("k")
-    )
-
-
-def _heaps_law_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    ks = "(25), (50), (100), (200), (400)"
-    return f"""
-        WITH first AS (
-            SELECT term, MIN(doc_id) AS first_doc FROM (
-                SELECT doc_id, unnest({w}) AS term FROM documents)
-            GROUP BY 1),
-        ladder AS (SELECT k FROM (VALUES {ks}) t(k)),
-        curve AS (
-            SELECT k, COUNT(*) AS vocab
-            FROM first CROSS JOIN ladder WHERE first_doc < k
-            GROUP BY 1),
-        xy AS (SELECT k, vocab, LN(CAST(k AS DOUBLE)) AS x,
-                      LN(CAST(vocab AS DOUBLE)) AS y FROM curve),
-        sums AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS m,
-                   ROUND(SUM(x), 9) AS sx, ROUND(SUM(y), 9) AS sy,
-                   ROUND(SUM(x * x), 9) AS sxx, ROUND(SUM(x * y), 9) AS sxy
-            FROM xy)
-        SELECT CAST(xy.k AS BIGINT) AS k, CAST(xy.vocab AS BIGINT) AS vocab,
-               ROUND((m * sxy - sx * sy) / (m * sxx - sx * sx), 6)
-                   AS heaps_beta
-        FROM xy CROSS JOIN sums
-        ORDER BY k
-    """
-
-
-# ---------------------------------------------------------------------------
-# Geary's C + corpus-statistics (Zipf, Burrows' Delta) (session 6)
-# ---------------------------------------------------------------------------
-
-
-def q_gearys_c(spark, sf_dir):
-    """Geary's contiguity ratio C over res-4 event occupancy — the
-    difference-based complement of Moran's I (C<1 clustered). Same scale
-    shape as morans_i: one point shuffle, ring join over occupied cells
-    (operators/spatial_stats.py:gearys_c)."""
-    from raptor_service_spark.operators.spatial_stats import gearys_c
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(lat.alias("lat"), lng.alias("lng"))
-    return gearys_c(pts, res=4)
-
-
-def _gearys_c_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import gearys_c_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return gearys_c_sql("events", lat, lng, res=4)
 
 
 def q_zipf_slope(spark, sf_dir):
@@ -9878,1011 +3242,8 @@ def _source_delta_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# adaptive quadtree tiling (session 6)
+# BPE apply
 # ---------------------------------------------------------------------------
-
-_QT_MIN, _QT_MAX, _QT_CAP = 1, 6, 50
-
-
-def q_quadtree_bins(spark, sf_dir):
-    """Adaptive quadtree tiling of the event cloud: starting at res 1, any
-    cell holding more than cap=50 points splits into its 4 children, down
-    to res 6 — dense metros get fine tiles, empty ocean stays coarse (the
-    adaptive analog of the fixed-res tile tree; mirrors the reference's
-    max-cluster-size split loop, services/core/build_tree_service.py).
-    A point's tile is the COARSEST ladder cell with occupancy <= cap
-    (occupancy is monotone along the ladder, so this IS the quadtree leaf).
-
-    Scale shape: points touched ONCE (res-6 occupancy agg); every coarser
-    occupancy is a rollup of occ6 via the closed-form parent (aggregated
-    rows only); ladder explode ×6 runs on the occupied-cell table; leaf
-    pick is a min(struct) agg. Exact integers end to end."""
-    from raptor_service_spark.geo.grid import cell_encode_col, cell_parent_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    occ6 = (
-        ev.select(cell_encode_col(lat, lng, _QT_MAX).alias("cell6"))
-        .groupBy("cell6")
-        .agg(F.count(F.lit(1)).alias("n6"))
-    )
-    ladder = occ6.select(
-        "cell6",
-        "n6",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        cell_parent_col(F.col("cell6"), _QT_MAX, r).alias("anc"),
-                    )
-                    for r in range(_QT_MIN, _QT_MAX + 1)
-                ]
-            )
-        ).alias("s"),
-    ).select("cell6", "n6", F.col("s.r").alias("r"), F.col("s.anc").alias("anc"))
-    occ_all = ladder.groupBy("r", "anc").agg(F.sum("n6").alias("occ"))
-    assign = ladder.join(occ_all, ["r", "anc"]).filter(
-        (F.col("occ") <= _QT_CAP) | (F.col("r") == _QT_MAX)
-    )
-    pick = assign.groupBy("cell6").agg(
-        F.min(F.struct("r", "anc", "occ")).alias("p")
-    )
-    return (
-        pick.select(
-            F.col("p.r").alias("res"),
-            F.col("p.anc").alias("cell"),
-            F.col("p.occ").alias("n_points"),
-        )
-        .distinct()
-        .orderBy("res", "cell")
-    )
-
-
-def _quadtree_bins_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql, cell_parent_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell6 = cell_encode_sql(lat, lng, _QT_MAX)
-    branches = " UNION ALL ".join(
-        f"SELECT cell6, n6, {r} AS r, "
-        f"{cell_parent_sql('cell6', _QT_MAX, r)} AS anc FROM p6"
-        for r in range(_QT_MIN, _QT_MAX + 1)
-    )
-    return f"""
-        WITH p6 AS (
-            SELECT {cell6} AS cell6, COUNT(*) AS n6 FROM events GROUP BY 1),
-        ladder AS ({branches}),
-        occ_all AS (SELECT r, anc, CAST(SUM(n6) AS BIGINT) AS occ
-                    FROM ladder GROUP BY 1, 2),
-        assign AS (
-            SELECT l.cell6, l.r, l.anc, o.occ
-            FROM ladder l JOIN occ_all o ON l.r = o.r AND l.anc = o.anc
-            WHERE o.occ <= {_QT_CAP} OR l.r = {_QT_MAX}),
-        pick AS (
-            SELECT cell6, r, anc, occ,
-                   ROW_NUMBER() OVER (PARTITION BY cell6 ORDER BY r) AS rn
-            FROM assign)
-        SELECT DISTINCT r AS res, anc AS cell, occ AS n_points
-        FROM pick WHERE rn = 1
-        ORDER BY res, cell
-    """
-
-
-# ---------------------------------------------------------------------------
-# join-count statistics + k-core peeling (session 6)
-# ---------------------------------------------------------------------------
-
-
-def q_join_counts(spark, sf_dir):
-    """Cliff-Ord black/white join-count statistics over res-3 event
-    occupancy: binarize cells at the global mean count, count queen-adjacent
-    BB/BW/WW joins (each pair once), compare with nonfree-sampling
-    expectations. One point shuffle; ring join over O(occupied cells); all
-    counts exact integers (operators/spatial_stats.py:join_counts)."""
-    from raptor_service_spark.operators.spatial_stats import join_counts
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(lat.alias("lat"), lng.alias("lng"))
-    return join_counts(pts, res=3)
-
-
-def _join_counts_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import join_counts_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return join_counts_sql("events", lat, lng, res=3)
-
-
-def q_cell_kcore(spark, sf_dir):
-    """k-core (k=3) of the occupied res-5 document-cell lattice: iterative
-    degree peeling to the dense skeleton, fixpoint within 8 rounds; the
-    oracle unrolls the identical peel as a CTE chain (peeling is monotone,
-    so early convergence agrees with the full unroll). Per round: one
-    degree agg + two semi-joins over O(edges)
-    (operators/cell_graph.py:kcore)."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.cell_graph import kcore
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = d.select(cell_encode_col(lat, lng, _ISO_RES).alias("cell"))
-    return kcore(occ, res=_ISO_RES, k=3, max_rounds=8)
-
-
-def _cell_kcore_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import kcore_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _ISO_RES)
-    return kcore_sql(
-        f"SELECT {cell} AS cell FROM documents", res=_ISO_RES, k=3, max_rounds=8
-    )
-
-
-# ---------------------------------------------------------------------------
-# PassJoin edit-distance fuzzy join + TF-IDF keyword extraction (session 6)
-# ---------------------------------------------------------------------------
-
-
-_TITLE_SPARK = "array_join(slice(split(trim(text), ' '), 1, 3), ' ')"
-_TITLE_SQL = "array_to_string(list_slice(string_split(trim(text), ' '), 1, 3), ' ')"
-
-
-def q_fuzzy_title_pairs(spark, sf_dir):
-    """Exact edit-distance<=2 similarity join on document 'titles' (first 3
-    words) via the PassJoin partition scheme — pigeonhole segments turn the
-    fuzzy join into a bounded-fanout EQUI-join (15 probe / 75 index rows per
-    string, constants in d), verified with JVM codegen levenshtein. The
-    fuzzy-key analog of the reference's checksum dedup
-    (repositories/chunk_repo.py upsert keys). Oracle is the brute-force
-    levenshtein self-join, proving the partition scheme loses no pair."""
-    from raptor_service_spark.operators.dedup import passjoin_pairs
-
-    d = _read(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_TITLE_SPARK).alias("title")
-    )
-    return passjoin_pairs(d, "doc_id", "title", max_dist=2).orderBy(
-        "doc_a", "doc_b"
-    )
-
-
-def _fuzzy_title_pairs_sql() -> str:
-    from raptor_service_spark.operators.dedup import passjoin_pairs_sql
-
-    return passjoin_pairs_sql(
-        f"SELECT doc_id AS id, {_TITLE_SQL} AS k FROM documents", max_dist=2
-    )
-
-
-def q_doc_tfidf_terms(spark, sf_dir):
-    """TF-IDF keyword extraction: top-3 terms per document (docs 0-99) with
-    corpus-wide document frequency. Scale shape: term explode feeds two
-    partial+final aggs (tf per (doc, term); df per term over the FULL
-    corpus); the tf⋈df equi-join shuffles on term (both sides aggregated —
-    never raw token rows); N arrives as a broadcast scalar; per-doc top-3 is
-    a WindowGroupLimit rank. Ranking uses the 6-dp ROUNDED score in BOTH
-    engines so ties break identically (score DESC, term ASC)."""
-    from pyspark.sql import Window
-    from raptor_service_spark.operators.dedup import words_col
-
-    d = _read(spark, sf_dir, "documents")
-    terms = d.select("doc_id", F.explode(words_col(F.col("text"))).alias("term"))
-    df_tbl = terms.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
-    tot = F.broadcast(d.agg(F.count(F.lit(1)).alias("n_docs")))
-    tf = (
-        terms.filter(F.col("doc_id") < 100)
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    scored = (
-        tf.join(df_tbl, "term")
-        .crossJoin(tot)
-        .withColumn(
-            "score",
-            F.round(
-                F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "term", "tf", "score", "rk")
-    )
-
-
-def _doc_tfidf_terms_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    return f"""
-        WITH terms AS (
-            SELECT doc_id, unnest({w}) AS term FROM documents),
-        dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM terms GROUP BY 1),
-        tot AS (SELECT COUNT(*) AS n_docs FROM documents),
-        tf AS (
-            SELECT doc_id, term, COUNT(*) AS tf FROM terms
-            WHERE doc_id < 100 GROUP BY 1, 2),
-        scored AS (
-            SELECT t.doc_id, t.term, t.tf,
-                   ROUND(t.tf * LN(CAST(n_docs AS DOUBLE) / df), 6) AS score
-            FROM tf t JOIN dfreq USING (term) CROSS JOIN tot)
-        SELECT doc_id, term, tf, score, rk FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                       ORDER BY score DESC, term ASC) AS rk
-            FROM scored)
-        WHERE rk <= 3
-    """
-
-
-# ---------------------------------------------------------------------------
-# geostatistics (semivariogram + model fit), IPF matrix balancing, and the
-# distributed-sketch trio (KMV distinct, Bloom semi-join, count-min sketch)
-# ---------------------------------------------------------------------------
-
-_VG_SAMPLE_MOD, _VG_HMAX, _VG_BINW = 4, 6.0, 1.0
-
-
-def _vg_points(spark, sf_dir):
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "value")
-        .filter(F.col("event_id") % _VG_SAMPLE_MOD == 0)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    return ev.withColumn("lat", lat).withColumn("lng", lng)
-
-
-_VG_BIN_CACHE: dict = {}
-_VG_PAIR_CACHE: dict = {}
-
-
-def _vg_pairs(spark, sf_dir):
-    """The ε-ring pair stream (dist, va, vb, dx, dy), derived and PERSISTED
-    once per (application, sf_dir) — shared by the omnidirectional bins
-    (`_vg_bins`) and the directional variogram (one ring join feeds both;
-    the shingle-stream sharing pattern)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _VG_PAIR_CACHE:
-        return _VG_PAIR_CACHE[key]
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    pts = _vg_points(spark, sf_dir)
-    pr = within_distance_join(pts, pts, eps=_VG_HMAX).filter(
-        F.col("l.event_id") < F.col("r.event_id")
-    )
-    out = pr.select(
-        "dist",
-        F.col("l.value").alias("va"),
-        F.col("r.value").alias("vb"),
-        (F.col("r.lng") - F.col("l.lng")).alias("dx"),
-        (F.col("r.lat") - F.col("l.lat")).alias("dy"),
-    )
-    _VG_PAIR_CACHE.clear()  # one live corpus at a time; bounded memory
-    _VG_PAIR_CACHE[key] = out.persist()
-    return _VG_PAIR_CACHE[key]
-
-
-def _vg_bins(spark, sf_dir):
-    """Shared per-bin (n_pairs, sum dist, sum sqdiff) stream for the
-    semivariogram and its model fit: the ε-ring pair join (each pair found
-    exactly once — no dedup shuffle) feeds ONE partial+final agg to
-    <= hmax/binw rows. 9-dp post-sum rounding per repo convention.
-    The aggregated bin table (≤ 6 rows) is persisted once per
-    (application, sf_dir) — the shingle-stream sharing pattern — so the
-    fit query reuses the pair join instead of re-deriving it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _VG_BIN_CACHE:
-        return _VG_BIN_CACHE[key]
-    pr = _vg_pairs(spark, sf_dir)
-    dv = F.col("va") - F.col("vb")
-    pairs = pr.select(
-        F.floor(F.col("dist") / F.lit(_VG_BINW)).cast("long").alias("bin"),
-        F.col("dist"),
-        F.round(dv * dv, 9).alias("sq"),
-    ).filter(F.col("bin") < F.lit(int(_VG_HMAX / _VG_BINW)))
-    bins = pairs.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.round(F.sum("dist"), 9).alias("sd"),
-        F.round(F.sum("sq"), 9).alias("ss"),
-    )
-    _VG_BIN_CACHE.clear()  # one live corpus at a time; bounded memory
-    _VG_BIN_CACHE[key] = bins.persist()
-    return _VG_BIN_CACHE[key]
-
-
-def q_semivariogram(spark, sf_dir):
-    """Empirical semivariogram of the event value field — THE geostatistics
-    primitive under kriging/interpolation QA: γ(h) = mean((v_i−v_j)²)/2 over
-    point pairs binned by separation distance. Pairs come from the ε-ring
-    cell join (3×3 neighbor explode at auto res, each pair exactly once);
-    the variogram itself is one agg over <= 6 bins. Oracle: brute-force
-    pair join with bit-identical distance/rounding arithmetic.
-
-    Scale shape at 100 TB: the deterministic %-sample bounds the pair
-    stream; candidates are ring-bounded (never all-pairs); output is
-    O(n_bins). Reference analog: the retrieval-quality score histograms of
-    services/retrieval_service.py recast as spatial structure functions."""
-    b = _vg_bins(spark, sf_dir)
-    return b.select(
-        "bin",
-        "n_pairs",
-        F.round(F.col("sd") / F.col("n_pairs"), 6).alias("avg_h"),
-        F.round(F.col("ss") / (F.lit(2.0) * F.col("n_pairs")), 6).alias("gamma"),
-    )
-
-
-def q_variogram_fit(spark, sf_dir):
-    """Linear variogram-model fit γ(h) ≈ nugget + slope·h by OLS over the
-    empirical bins (bin midpoints vs 6-dp γ values — both engines regress
-    identical doubles; 9-dp pre-rounded sums per repo convention). The
-    nugget/slope pair is the input to kriging weights and to
-    sensor-noise-floor QA. Runs entirely on the O(n_bins) aggregated
-    table."""
-    b = _vg_bins(spark, sf_dir)
-    xy = b.select(
-        ((F.col("bin").cast("double") + F.lit(0.5)) * F.lit(_VG_BINW)).alias("x"),
-        F.round(F.col("ss") / (F.lit(2.0) * F.col("n_pairs")), 6).alias("y"),
-    )
-    s = xy.agg(
-        F.count(F.lit(1)).cast("double").alias("k"),
-        F.round(F.sum("x"), 9).alias("sx"),
-        F.round(F.sum("y"), 9).alias("sy"),
-        F.round(F.sum(F.col("x") * F.col("x")), 9).alias("sxx"),
-        F.round(F.sum(F.col("x") * F.col("y")), 9).alias("sxy"),
-    )
-    det = F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
-    slope = (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy")) / det
-    return s.select(
-        F.col("k").cast("long").alias("n_bins"),
-        F.when(F.col("k") > 1, F.round(slope, 6)).alias("slope"),
-        F.when(
-            F.col("k") > 1,
-            F.round((F.col("sy") - slope * F.col("sx")) / F.col("k"), 6),
-        ).alias("nugget"),
-    )
-
-
-def _vg_pairs_sql() -> str:
-    lat_a, lng_a = _latlng_sql("a.event_id")
-    lat_b, lng_b = _latlng_sql("b.event_id")
-    d = (
-        f"ROUND(sqrt(({lat_a} - {lat_b}) * ({lat_a} - {lat_b}) + "
-        f"({lng_a} - {lng_b}) * ({lng_a} - {lng_b})), 6)"
-    )
-    nb = int(_VG_HMAX / _VG_BINW)
-    return f"""
-        pts AS (SELECT event_id, value FROM events
-                WHERE event_id % {_VG_SAMPLE_MOD} = 0),
-        pr AS (
-            SELECT CAST(FLOOR({d} / {_VG_BINW}) AS BIGINT) AS bin, {d} AS dist,
-                   ROUND((a.value - b.value) * (a.value - b.value), 9) AS sq
-            FROM pts a JOIN pts b ON a.event_id < b.event_id
-            WHERE {d} <= {_VG_HMAX}),
-        bins AS (
-            SELECT bin, COUNT(*) AS n_pairs, ROUND(SUM(dist), 9) AS sd,
-                   ROUND(SUM(sq), 9) AS ss
-            FROM pr WHERE bin < {nb} GROUP BY 1)
-    """
-
-
-def _semivariogram_sql() -> str:
-    return f"""
-        WITH {_vg_pairs_sql()}
-        SELECT bin, n_pairs, ROUND(sd / n_pairs, 6) AS avg_h,
-               ROUND(ss / (2.0 * n_pairs), 6) AS gamma
-        FROM bins
-    """
-
-
-def _variogram_fit_sql() -> str:
-    return f"""
-        WITH {_vg_pairs_sql()},
-        xy AS (
-            SELECT (CAST(bin AS DOUBLE) + 0.5) * {_VG_BINW} AS x,
-                   ROUND(ss / (2.0 * n_pairs), 6) AS y
-            FROM bins),
-        s AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS k, ROUND(SUM(x), 9) AS sx,
-                   ROUND(SUM(y), 9) AS sy, ROUND(SUM(x * x), 9) AS sxx,
-                   ROUND(SUM(x * y), 9) AS sxy
-            FROM xy)
-        SELECT CAST(k AS BIGINT) AS n_bins,
-               CASE WHEN k > 1 THEN
-                 ROUND((k * sxy - sx * sy) / (k * sxx - sx * sx), 6) END AS slope,
-               CASE WHEN k > 1 THEN
-                 ROUND((sy - (k * sxy - sx * sy) / (k * sxx - sx * sx) * sx) / k,
-                       6) END AS nugget
-        FROM s
-    """
-
-
-_IPF_RES, _IPF_ROUNDS = 3, 3
-
-
-def q_od_ipf_balance(spark, sf_dir):
-    """IPF / Furness balancing of the OD flow matrix — the transport-
-    planning workhorse: the even-day transition matrix (seed) is scaled by
-    alternating row/column passes to match the odd-day origin outflow and
-    destination inflow margins (3 rounds, 9-dp per-scaling rounding so the
-    unrolled DuckDB CTEs converge on identical doubles).
-
-    Scale shape at 100 TB: the ONLY point-row cost is the user-partitioned
-    lag window + one partial+final agg to the O(cells²) matrix; every IPF
-    round is two aggs + two broadcast-sized joins on that aggregated
-    table — the driver never collects anything."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86_400_000_000)
-    ).cast("long")
-    pts = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        cell_encode_col(lat, lng, _IPF_RES).alias("cell"),
-        day.alias("day"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tr = pts.withColumn("prev_cell", F.lag("cell").over(w)).filter(
-        F.col("prev_cell").isNotNull()
-    )
-    seed = (
-        tr.filter(F.col("day") % 2 == 0)
-        .groupBy(F.col("prev_cell").alias("i"), F.col("cell").alias("j"))
-        .agg(F.count(F.lit(1)).alias("t0"))
-    )
-    odd = tr.filter(F.col("day") % 2 == 1)
-    rt = odd.groupBy(F.col("prev_cell").alias("i")).agg(
-        F.count(F.lit(1)).alias("rt")
-    )
-    ct = odd.groupBy(F.col("cell").alias("j")).agg(F.count(F.lit(1)).alias("ct"))
-    # localCheckpoint per round (the k-core/components lineage-cut pattern):
-    # each round references m twice (m ⋈ agg(m)), so without the cut the
-    # point-row transition window re-evaluates 2^(2·rounds) times — the
-    # checkpointed matrix is O(cells²) rows, so the cut is free.
-    m = (
-        seed.join(rt, "i")
-        .join(ct, "j")
-        .select("i", "j", "t0", F.col("t0").cast("double").alias("t"), "rt", "ct")
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(_IPF_ROUNDS):
-        rs = m.groupBy("i").agg(F.round(F.sum("t"), 9).alias("rs"))
-        m = (
-            m.join(rs, "i")
-            .withColumn("t", F.round(F.col("t") * F.col("rt") / F.col("rs"), 9))
-            .drop("rs")
-        )
-        cs = m.groupBy("j").agg(F.round(F.sum("t"), 9).alias("cs"))
-        m = (
-            m.join(cs, "j")
-            .withColumn("t", F.round(F.col("t") * F.col("ct") / F.col("cs"), 9))
-            .drop("cs")
-            .localCheckpoint(eager=False)
-        )
-    # t is already the 9-dp per-round value; a further 6-dp display rounding
-    # would RE-round a short decimal (ties at the 7th-9th dp are ~1e-3/row,
-    # and Spark HALF_UP vs C-library rounding disagree on them) — so the
-    # 9-dp value IS the output, per the knife-edge lesson in ADVICE.md.
-    return m.select(
-        F.col("i").alias("cell_from"),
-        F.col("j").alias("cell_to"),
-        "t0",
-        F.col("t").alias("t_bal"),
-    )
-
-
-def _od_ipf_balance_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _IPF_RES)
-    rounds = []
-    prev = "m0"
-    for r in range(_IPF_ROUNDS):
-        rounds.append(
-            f"""rs{r} AS (SELECT i, ROUND(SUM(t), 9) AS rs FROM {prev} GROUP BY 1),
-        mr{r} AS (
-            SELECT m.i, m.j, m.t0, ROUND(m.t * m.rt / rs.rs, 9) AS t, m.rt, m.ct
-            FROM {prev} m JOIN rs{r} rs ON m.i = rs.i),
-        cs{r} AS (SELECT j, ROUND(SUM(t), 9) AS cs FROM mr{r} GROUP BY 1),
-        mc{r} AS (
-            SELECT m.i, m.j, m.t0, ROUND(m.t * m.ct / cs.cs, 9) AS t, m.rt, m.ct
-            FROM mr{r} m JOIN cs{r} cs ON m.j = cs.j)"""
-        )
-        prev = f"mc{r}"
-    body = ",\n        ".join(rounds)
-    return f"""
-        WITH p AS (
-            SELECT user_id, ts, event_id, {cell} AS cell,
-                   CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS day
-            FROM events),
-        tr AS (
-            SELECT cell, day,
-                   LAG(cell) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev_cell
-            FROM p),
-        seed AS (
-            SELECT prev_cell AS i, cell AS j, COUNT(*) AS t0
-            FROM tr WHERE prev_cell IS NOT NULL AND day % 2 = 0 GROUP BY 1, 2),
-        rt AS (
-            SELECT prev_cell AS i, COUNT(*) AS rt
-            FROM tr WHERE prev_cell IS NOT NULL AND day % 2 = 1 GROUP BY 1),
-        ct AS (
-            SELECT cell AS j, COUNT(*) AS ct
-            FROM tr WHERE prev_cell IS NOT NULL AND day % 2 = 1 GROUP BY 1),
-        m0 AS (
-            SELECT s.i, s.j, s.t0, CAST(s.t0 AS DOUBLE) AS t, rt.rt, ct.ct
-            FROM seed s JOIN rt ON s.i = rt.i JOIN ct ON s.j = ct.j),
-        {body}
-        SELECT i AS cell_from, j AS cell_to, t0, t AS t_bal
-        FROM {prev}
-    """
-
-
-_KMV_K, _KMV_RES = 32, 2
-_KMV_DENOM = float(1 << 48)
-
-
-def q_kmv_distinct(spark, sf_dir):
-    """KMV / bottom-k (theta-sketch family) distinct-count estimation of
-    per-cell unique users: estimate = (k−1)/h_(k) where h_(k) is the k-th
-    smallest md5-uniform hash — next to exact COUNT(DISTINCT) for error
-    audit. THE mergeable distinct sketch a 100 TB engine ships between
-    executors instead of raw value sets: per partition keep the k smallest
-    hashes (O(k) state), merge = k-smallest of the union. Here the sketch
-    is computed relationally (dedupe → per-cell rank window → k-th value,
-    operators/sketches.py) so DuckDB reproduces it bit-exactly; cells with
-    < k users fall back to the exact count (the sketch is exact until
-    full). The streaming twin (`streaming/kmv.py`) maintains the identical
-    sketch as bounded keyed state and converges to THIS output exactly."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.sketches import kmv_distinct_agg
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pairs = ev.select(cell_encode_col(lat, lng, _KMV_RES).alias("cell"), "user_id")
-    return kmv_distinct_agg(pairs, k=_KMV_K)
-
-
-def _kmv_distinct_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _KMV_RES)
-    return f"""
-        WITH cu AS (SELECT DISTINCT {cell} AS cell, user_id FROM events),
-        hu AS (
-            SELECT cell, user_id,
-                   ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))::BIGINT
-                     / {_KMV_DENOM} AS h
-            FROM cu),
-        r AS (
-            SELECT cell, h,
-                   ROW_NUMBER() OVER (PARTITION BY cell
-                                      ORDER BY h, user_id) AS rk
-            FROM hu),
-        per AS (
-            SELECT cell, COUNT(*) AS n_exact,
-                   MAX(CASE WHEN rk = {_KMV_K} THEN h END) AS hk
-            FROM r GROUP BY 1)
-        SELECT cell, n_exact,
-               CASE WHEN hk IS NOT NULL THEN ROUND({float(_KMV_K - 1)} / hk, 6)
-                    ELSE CAST(n_exact AS DOUBLE) END AS n_kmv
-        FROM per
-    """
-
-
-_BLOOM_M = 4096
-
-
-def _bloom_pos(key):
-    hx = F.md5(key.cast("string"))
-    p1 = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long") % _BLOOM_M
-    p2 = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long") % _BLOOM_M
-    return p1, p2
-
-
-def q_bloom_semi_join(spark, sf_dir):
-    """Bloom-filtered semi-join with false-positive accounting: a 4096-bit
-    k=2 Bloom filter built over BUILDING-segment customer keys pre-filters
-    the orders probe BEFORE the exact membership join — the
-    runtime-filter / DPP technique that turns a 100 TB shuffle join into a
-    map-side scan prune (Spark's own spark.sql.optimizer.runtimeFilter,
-    made explicit and measurable). Output per order status: probes, Bloom
-    passes, true members, false positives, and the realized FP rate vs the
-    (1−e^{-kn/m})^k design point. All bit positions are md5 arithmetic —
-    bit-exact in both engines."""
-    cust = _read(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    build = cust.filter(F.col("c_mktsegment") == "BUILDING").select(
-        F.col("c_custkey").alias("key")
-    )
-    p1, p2 = _bloom_pos(F.col("key"))
-    bits = (
-        build.select(p1.alias("pos"))
-        .unionByName(build.select(p2.alias("pos")))
-        .distinct()
-    )
-    orders = _read(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
-    q1, q2 = _bloom_pos(F.col("o_custkey"))
-    probe = orders.withColumn("p1", q1).withColumn("p2", q2)
-    b1 = bits.select(F.col("pos").alias("p1"), F.lit(1).alias("b1_hit"))
-    b2 = bits.select(F.col("pos").alias("p2"), F.lit(1).alias("b2_hit"))
-    truth = build.select(F.col("key").alias("o_custkey"), F.lit(1).alias("is_true"))
-    flagged = (
-        probe.join(F.broadcast(b1), "p1", "left")
-        .join(F.broadcast(b2), "p2", "left")
-        .join(F.broadcast(truth), "o_custkey", "left")
-        .withColumn(
-            "pass",
-            (F.col("b1_hit").isNotNull() & F.col("b2_hit").isNotNull()).cast(
-                "long"
-            ),
-        )
-        .withColumn("hit", F.col("is_true").isNotNull().cast("long"))
-    )
-    agg = flagged.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_probe"),
-        F.sum("pass").alias("n_pass"),
-        F.sum("hit").alias("n_true"),
-        F.sum(F.col("pass") * (F.lit(1) - F.col("hit"))).alias("n_false_pos"),
-    )
-    nonmember = F.col("n_probe") - F.col("n_true")
-    return agg.select(
-        "o_orderstatus",
-        "n_probe",
-        "n_pass",
-        "n_true",
-        "n_false_pos",
-        F.when(
-            nonmember > 0, F.round(F.col("n_false_pos") / nonmember, 6)
-        ).alias("fp_rate"),
-    )
-
-
-def _bloom_semi_join_sql() -> str:
-    def pos(expr: str, off: int) -> str:
-        return (
-            f"(('0x' || substr(md5(CAST({expr} AS VARCHAR)), {off}, 8))::BIGINT"
-            f" % {_BLOOM_M})"
-        )
-
-    return f"""
-        WITH build AS (
-            SELECT c_custkey AS key FROM customer
-            WHERE c_mktsegment = 'BUILDING'),
-        bits AS (
-            SELECT DISTINCT pos FROM (
-                SELECT {pos('key', 1)} AS pos FROM build
-                UNION ALL SELECT {pos('key', 9)} AS pos FROM build)),
-        f AS (
-            SELECT o_orderstatus,
-                   CASE WHEN {pos('o_custkey', 1)} IN (SELECT pos FROM bits)
-                         AND {pos('o_custkey', 9)} IN (SELECT pos FROM bits)
-                        THEN 1 ELSE 0 END AS pass,
-                   CASE WHEN o_custkey IN (SELECT key FROM build)
-                        THEN 1 ELSE 0 END AS hit
-            FROM orders)
-        SELECT o_orderstatus, COUNT(*) AS n_probe,
-               CAST(SUM(pass) AS BIGINT) AS n_pass,
-               CAST(SUM(hit) AS BIGINT) AS n_true,
-               CAST(SUM(pass * (1 - hit)) AS BIGINT) AS n_false_pos,
-               CASE WHEN COUNT(*) - SUM(hit) > 0 THEN
-                 ROUND(CAST(SUM(pass * (1 - hit)) AS DOUBLE)
-                       / (COUNT(*) - SUM(hit)), 6) END AS fp_rate
-        FROM f GROUP BY 1
-    """
-
-
-_CMS_W, _CMS_D, _CMS_TOP = 512, 3, 20
-
-
-def q_cms_heavy_hitters(spark, sf_dir):
-    """Count-min-sketch frequency estimation audited against exact counts:
-    a d=3 × w=512 CMS over the corpus term stream, then the exact top-20
-    terms are point-queried (estimate = min over the d counters) and the
-    guaranteed-one-sided overcount is reported per term. THE bounded-memory
-    frequency sketch for 100 TB streams: counters are mergeable partial
-    aggs (O(d·w) state per partition), never a per-term hash table. All
-    integer md5 arithmetic — exact parity."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.dedup import words_col
-
-    d = _read(spark, sf_dir, "documents")
-    counts = (
-        d.select(F.explode(words_col(F.col("text"))).alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-    def bucket(r: int):
-        return (
-            F.conv(
-                F.substring(F.md5(F.concat(F.col("term"), F.lit(f"#{r}"))), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % _CMS_W
-        )
-
-    sk = counts.select(F.lit(0).alias("r"), bucket(0).alias("bucket"), "n")
-    for r in range(1, _CMS_D):
-        sk = sk.unionByName(
-            counts.select(F.lit(r).alias("r"), bucket(r).alias("bucket"), "n")
-        )
-    counters = sk.groupBy("r", "bucket").agg(F.sum("n").cast("long").alias("c"))
-    # exact top-k side: TakeOrderedAndProject (orderBy.limit), then rank the
-    # surviving k rows — never a row_number over the full O(vocab) count
-    # table (VERDICT r4 item 1).
-    order = [F.col("n").desc(), F.col("term").asc()]
-    top = (
-        counts.orderBy(*order)
-        .limit(_CMS_TOP)
-        .withColumn("rk", F.row_number().over(Window.orderBy(*order)))
-    )
-    est = top.select(
-        "term", "n", F.col("rk").cast("long").alias("rk"),
-        *[bucket(r).alias(f"b{r}") for r in range(_CMS_D)],
-    )
-    for r in range(_CMS_D):
-        cr = counters.filter(F.col("r") == r).select(
-            F.col("bucket").alias(f"b{r}"), F.col("c").alias(f"c{r}")
-        )
-        est = est.join(F.broadcast(cr), f"b{r}")
-    mn = F.least(*[F.col(f"c{r}") for r in range(_CMS_D)])
-    return est.select(
-        "term",
-        F.col("n").alias("n_exact"),
-        mn.alias("n_cms"),
-        (mn - F.col("n")).alias("overcount"),
-        "rk",
-    )
-
-
-def _cms_heavy_hitters_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    b = (
-        f"(('0x' || substr(md5(t.term || '#' || c.r), 1, 8))::BIGINT % {_CMS_W})"
-    )
-    return f"""
-        WITH terms AS (SELECT unnest({w}) AS term FROM documents),
-        counts AS (
-            SELECT term, COUNT(*) AS n FROM terms WHERE term != '' GROUP BY 1),
-        sk AS (
-            SELECT rr.r,
-                   ('0x' || substr(md5(term || '#' || rr.r), 1, 8))::BIGINT
-                     % {_CMS_W} AS bucket,
-                   n
-            FROM counts CROSS JOIN (VALUES (0), (1), (2)) rr(r)),
-        counters AS (
-            SELECT r, bucket, CAST(SUM(n) AS BIGINT) AS c
-            FROM sk GROUP BY 1, 2),
-        top AS (
-            SELECT term, n, rk FROM (
-                SELECT term, n,
-                       ROW_NUMBER() OVER (ORDER BY n DESC, term ASC) AS rk
-                FROM counts)
-            WHERE rk <= {_CMS_TOP})
-        SELECT t.term, t.n AS n_exact, MIN(c.c) AS n_cms,
-               MIN(c.c) - t.n AS overcount, t.rk
-        FROM top t JOIN counters c ON c.bucket = {b}
-        GROUP BY t.term, t.n, t.rk
-    """
-
-
-# ---------------------------------------------------------------------------
-# histogram quantile sketch, matryoshka retrieval audit, BPE apply,
-# KMV set operations
-# ---------------------------------------------------------------------------
-
-_HQ_BINS = 128
-_HQ_QS = (0.5, 0.95, 0.99)
-
-
-def q_histogram_quantiles(spark, sf_dir):
-    """Histogram-sketch quantile estimation audited against exact order
-    statistics: per event type, P50/P95/P99 of the value column from a
-    128-bin equi-width histogram (the mergeable O(bins) state a 100 TB
-    engine keeps per partition — Spark's approxQuantile idea, made
-    deterministic) next to the exact type-1 quantile (value at rank
-    ⌈q·n⌉), with the signed sketch error per row. The exact path costs a
-    per-group sort ONCE here for audit; at scale only the histogram runs.
-    All bin arithmetic is shared-double identical in both engines."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_type", "event_id", "value")
-    st = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("value").alias("mn"),
-        F.max("value").alias("mx"),
-    )
-    qdf = spark.createDataFrame([(q,) for q in _HQ_QS], "q double")
-    tq = st.crossJoin(F.broadcast(qdf)).withColumn(
-        "k", F.ceil(F.col("q") * F.col("n")).cast("long")
-    )
-    ranked = ev.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("event_type").orderBy("value", "event_id")
-        ),
-    )
-    exact = tq.join(
-        ranked.select("event_type", F.col("rn").alias("k"), "value"),
-        ["event_type", "k"],
-    ).select("event_type", "q", "k", F.col("value").alias("exact"), "mn", "mx")
-    width = F.col("mx") - F.col("mn")
-    evb = ev.join(F.broadcast(st), "event_type").withColumn(
-        "bin",
-        F.when(
-            width > 0,
-            F.least(
-                F.lit(_HQ_BINS - 1),
-                F.floor((F.col("value") - F.col("mn")) / width * _HQ_BINS),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long"),
-    )
-    cum = (
-        evb.groupBy("event_type", "bin")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn(
-            "cumn",
-            F.sum("c").over(
-                Window.partitionBy("event_type")
-                .orderBy("bin")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-    )
-    binq = (
-        exact.join(cum.select("event_type", "bin", "cumn"), "event_type")
-        .filter(F.col("cumn") >= F.col("k"))
-        .groupBy("event_type", "q", "k", "exact", "mn", "mx")
-        .agg(F.min("bin").alias("binq"))
-    )
-    est = F.round(
-        F.col("mn")
-        + (F.col("binq") + 1) * (F.col("mx") - F.col("mn")) / F.lit(float(_HQ_BINS)),
-        6,
-    )
-    return binq.select(
-        "event_type",
-        "q",
-        "k",
-        "exact",
-        est.alias("est"),
-        F.round(est - F.col("exact"), 6).alias("err"),
-    )
-
-
-def _histogram_quantiles_sql() -> str:
-    qs = ", ".join(f"({q})" for q in _HQ_QS)
-    return f"""
-        WITH ev AS (SELECT event_type, event_id, value FROM events),
-        st AS (
-            SELECT event_type, COUNT(*) AS n, MIN(value) AS mn, MAX(value) AS mx
-            FROM ev GROUP BY 1),
-        tq AS (
-            SELECT st.*, CAST(qq.q AS DOUBLE) AS q,
-                   CAST(CEIL(CAST(qq.q AS DOUBLE) * st.n) AS BIGINT) AS k
-            FROM st CROSS JOIN (VALUES {qs}) qq(q)),
-        ranked AS (
-            SELECT event_type, value,
-                   ROW_NUMBER() OVER (PARTITION BY event_type
-                                      ORDER BY value, event_id) AS rn
-            FROM ev),
-        exact AS (
-            SELECT t.event_type, t.q, t.k, r.value AS exact, t.mn, t.mx
-            FROM tq t JOIN ranked r
-              ON r.event_type = t.event_type AND r.rn = t.k),
-        evb AS (
-            SELECT e.event_type,
-                   CASE WHEN s.mx > s.mn THEN LEAST({_HQ_BINS - 1},
-                        CAST(FLOOR((e.value - s.mn) / (s.mx - s.mn)
-                             * {_HQ_BINS}) AS BIGINT))
-                        ELSE 0 END AS bin
-            FROM ev e JOIN st s ON e.event_type = s.event_type),
-        cum AS (
-            SELECT event_type, bin,
-                   SUM(c) OVER (PARTITION BY event_type ORDER BY bin
-                                ROWS UNBOUNDED PRECEDING) AS cumn
-            FROM (SELECT event_type, bin, COUNT(*) AS c
-                  FROM evb GROUP BY 1, 2)),
-        binq AS (
-            SELECT x.event_type, x.q, x.k, x.exact, x.mn, x.mx,
-                   MIN(c.bin) AS binq
-            FROM exact x JOIN cum c ON c.event_type = x.event_type
-            WHERE c.cumn >= x.k
-            GROUP BY 1, 2, 3, 4, 5, 6)
-        SELECT event_type, q, k, exact,
-               ROUND(mn + (binq + 1) * (mx - mn) / {float(_HQ_BINS)}, 6) AS est,
-               ROUND(ROUND(mn + (binq + 1) * (mx - mn) / {float(_HQ_BINS)}, 6)
-                     - exact, 6) AS err
-        FROM binq
-    """
-
-
-_MAT_DIM = 16
-
-
-def q_matryoshka_recall(spark, sf_dir):
-    """Matryoshka / truncated-dimension retrieval audit: top-10 by cosine
-    over the FIRST 16 dims vs top-10 over the full 64 — the
-    coarse-to-fine trick (truncated prefix scan, full-dim rerank of
-    survivors) that cuts ANN scan IO 4×. Output is the full-outer join of
-    the two top-10 rank lists; recall@10 is the row overlap. Both scans
-    are one codegen pass each, TakeOrderedAndProject finals."""
-    from pyspark.sql import Window
-
-    e = _read(spark, sf_dir, "embeddings")
-    full = (
-        e.withColumn("d", F.round(cosine_dist_col(F.col("embedding"), QVEC), 6))
-        .withColumn(
-            "rank_full",
-            F.row_number().over(Window.orderBy("d", "vec_id")).cast("long"),
-        )
-        .filter(F.col("rank_full") <= 10)
-        .select("vec_id", "rank_full")
-    )
-    from raptor_service_spark.functions.vector import cosine_dist_col as _cd
-
-    trunc = (
-        e.withColumn(
-            "d",
-            F.round(
-                _cd(F.slice(F.col("embedding"), 1, _MAT_DIM), QVEC[:_MAT_DIM]), 6
-            ),
-        )
-        .withColumn(
-            "rank_trunc",
-            F.row_number().over(Window.orderBy("d", "vec_id")).cast("long"),
-        )
-        .filter(F.col("rank_trunc") <= 10)
-        .select("vec_id", "rank_trunc")
-    )
-    return full.join(trunc, "vec_id", "full_outer").select(
-        "vec_id", "rank_full", "rank_trunc"
-    )
-
-
-def _matryoshka_recall_sql() -> str:
-    qtrunc = "[" + ", ".join(f"{x:.6f}" for x in QVEC[:_MAT_DIM]) + "]"
-    return f"""
-        WITH full10 AS (
-            SELECT vec_id, rank_full FROM (
-                SELECT vec_id, ROW_NUMBER() OVER (ORDER BY
-                    ROUND(1.0 - list_cosine_similarity(
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)),
-                        {QVEC_SQL}), 6), vec_id) AS rank_full
-                FROM embeddings)
-            WHERE rank_full <= 10),
-        trunc10 AS (
-            SELECT vec_id, rank_trunc FROM (
-                SELECT vec_id, ROW_NUMBER() OVER (ORDER BY
-                    ROUND(1.0 - list_cosine_similarity(
-                        list_transform(embedding[1:{_MAT_DIM}],
-                                       x -> CAST(x AS DOUBLE)),
-                        {qtrunc}), 6), vec_id) AS rank_trunc
-                FROM embeddings)
-            WHERE rank_trunc <= 10)
-        SELECT COALESCE(f.vec_id, t.vec_id) AS vec_id, f.rank_full, t.rank_trunc
-        FROM full10 f FULL OUTER JOIN trunc10 t ON f.vec_id = t.vec_id
-    """
 
 
 # fixed merge vocabulary over the synthetic corpus's character stream
@@ -10952,1263 +3313,6 @@ def _bpe_encode_sql() -> str:
                    ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, tok ASC) AS rk
             FROM toks WHERE LENGTH(tok) > 1 GROUP BY tok)
         WHERE rk <= 20
-    """
-
-
-def q_kmv_set_ops(spark, sf_dir):
-    """Theta-sketch-style SET OPERATIONS on KMV sketches: per res-2 cell,
-    estimate |A ∪ B| and |A ∩ B| for A = users seen on even days, B = odd
-    days — union = the k smallest hashes of A ∪ B (exactly the merge of
-    the two per-set sketches, which is WHY KMV scales: executors ship O(k)
-    states, never user sets), intersection via the theta Jaccard (fraction
-    of the union sketch present in both sets). Exact counts ride alongside
-    for the error audit; below-k cells are exact by construction."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86_400_000_000)
-    ).cast("long")
-    pres = (
-        ev.select(
-            cell_encode_col(lat, lng, _KMV_RES).alias("cell"),
-            "user_id",
-            (day % 2).alias("par"),
-        )
-        .groupBy("cell", "user_id")
-        .agg(
-            F.max((F.col("par") == 0).cast("int")).alias("in_a"),
-            F.max((F.col("par") == 1).cast("int")).alias("in_b"),
-        )
-    )
-    h = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        / F.lit(_KMV_DENOM)
-    )
-    ranked = pres.withColumn("h", h).withColumn(
-        "rk",
-        F.row_number().over(Window.partitionBy("cell").orderBy("h", "user_id")),
-    )
-    per = ranked.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_union"),
-        F.sum((F.col("in_a") * F.col("in_b")).cast("long")).alias("n_inter"),
-        F.max(F.when(F.col("rk") == _KMV_K, F.col("h"))).alias("hk"),
-        F.sum(
-            F.when(
-                (F.col("rk") <= _KMV_K) & (F.col("in_a") == 1) & (F.col("in_b") == 1),
-                F.lit(1),
-            ).otherwise(F.lit(0))
-        ).alias("both_in_theta"),
-        F.least(F.count(F.lit(1)), F.lit(_KMV_K).cast("long")).alias("kk"),
-    )
-    union_est = F.when(
-        F.col("hk").isNotNull(), F.round(F.lit(float(_KMV_K - 1)) / F.col("hk"), 6)
-    ).otherwise(F.col("n_union").cast("double"))
-    inter_est = F.round(
-        F.col("both_in_theta") / F.col("kk") * union_est, 6
-    )
-    return per.select(
-        "cell",
-        "n_union",
-        union_est.alias("union_est"),
-        "n_inter",
-        inter_est.alias("inter_est"),
-    )
-
-
-def _kmv_set_ops_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _KMV_RES)
-    return f"""
-        WITH pres AS (
-            SELECT {cell} AS cell, user_id,
-                   MAX(CASE WHEN CAST(FLOOR(epoch_us(ts) / 86400000000)
-                                 AS BIGINT) % 2 = 0 THEN 1 ELSE 0 END) AS in_a,
-                   MAX(CASE WHEN CAST(FLOOR(epoch_us(ts) / 86400000000)
-                                 AS BIGINT) % 2 = 1 THEN 1 ELSE 0 END) AS in_b
-            FROM events GROUP BY 1, 2),
-        ranked AS (
-            SELECT cell, user_id, in_a, in_b,
-                   ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))::BIGINT
-                     / {_KMV_DENOM} AS h,
-                   ROW_NUMBER() OVER (PARTITION BY cell ORDER BY
-                       ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1,
-                        12))::BIGINT / {_KMV_DENOM}, user_id) AS rk
-            FROM pres),
-        per AS (
-            SELECT cell, COUNT(*) AS n_union,
-                   CAST(SUM(in_a * in_b) AS BIGINT) AS n_inter,
-                   MAX(CASE WHEN rk = {_KMV_K} THEN h END) AS hk,
-                   SUM(CASE WHEN rk <= {_KMV_K} AND in_a = 1 AND in_b = 1
-                            THEN 1 ELSE 0 END) AS both_in_theta,
-                   LEAST(COUNT(*), {_KMV_K}) AS kk
-            FROM ranked GROUP BY 1)
-        SELECT cell, n_union,
-               CASE WHEN hk IS NOT NULL THEN ROUND({float(_KMV_K - 1)} / hk, 6)
-                    ELSE CAST(n_union AS DOUBLE) END AS union_est,
-               n_inter,
-               ROUND(both_in_theta / kk
-                     * CASE WHEN hk IS NOT NULL
-                            THEN ROUND({float(_KMV_K - 1)} / hk, 6)
-                            ELSE CAST(n_union AS DOUBLE) END, 6) AS inter_est
-        FROM per
-    """
-
-
-# ---------------------------------------------------------------------------
-# binary-quantized retrieval audit, drift statistics (PSI + two-sample KS),
-# Fellegi-Sunter record-linkage scoring, seasonal occupancy profile
-# ---------------------------------------------------------------------------
-
-
-def _sign_code_halves(q: np.ndarray) -> tuple[int, int]:
-    c0 = sum(1 << i for i in range(32) if q[i] > 0)
-    c1 = sum(1 << i for i in range(32) if q[32 + i] > 0)
-    return c0, c1
-
-
-def q_binary_quant_recall(spark, sf_dir):
-    """Binary (sign-bit) quantization retrieval audit — the 64×-compression
-    end of the quantization ladder (f32 → int8 → PQ → 1 bit): each 64-dim
-    embedding collapses to a 64-bit sign code, candidates rank by Hamming
-    distance (two bit_count(xor) ops), and the top-10 is joined full-outer
-    against the exact cosine top-10. At 100 TB the code column is 64 B →
-    8 B per vector, and Hamming scan is pure codegen integer ops — this
-    query MEASURES what that buys/costs in recall. Codes are built by ONE
-    posexplode + conditional-sum agg (bit-exact in both engines)."""
-    from pyspark.sql import Window
-
-    e = _read(spark, sf_dir, "embeddings")
-    q0, q1 = _sign_code_halves(QVEC)
-    pe = e.select("vec_id", F.posexplode("embedding").alias("pos", "v"))
-    bit = F.expr("shiftleft(CAST(1 AS BIGINT), pos % 32)")
-    codes = pe.groupBy("vec_id").agg(
-        F.sum(F.when((F.col("v") > 0) & (F.col("pos") < 32), bit).otherwise(0))
-        .cast("long")
-        .alias("c0"),
-        F.sum(F.when((F.col("v") > 0) & (F.col("pos") >= 32), bit).otherwise(0))
-        .cast("long")
-        .alias("c1"),
-    )
-    ham = (
-        F.bit_count(F.expr(f"c0 ^ CAST({q0} AS BIGINT)"))
-        + F.bit_count(F.expr(f"c1 ^ CAST({q1} AS BIGINT)"))
-    ).cast("long")
-    binr = (
-        codes.withColumn("hd", ham)
-        .withColumn(
-            "rank_bin",
-            F.row_number().over(Window.orderBy("hd", "vec_id")).cast("long"),
-        )
-        .filter(F.col("rank_bin") <= 10)
-        .select("vec_id", "hd", "rank_bin")
-    )
-    full = (
-        e.withColumn("d", F.round(cosine_dist_col(F.col("embedding"), QVEC), 6))
-        .withColumn(
-            "rank_full",
-            F.row_number().over(Window.orderBy("d", "vec_id")).cast("long"),
-        )
-        .filter(F.col("rank_full") <= 10)
-        .select("vec_id", "rank_full")
-    )
-    return full.join(binr, "vec_id", "full_outer").select(
-        "vec_id", "rank_full", "rank_bin", "hd"
-    )
-
-
-def _binary_quant_recall_sql() -> str:
-    q0, q1 = _sign_code_halves(QVEC)
-    return f"""
-        WITH pe AS (
-            SELECT vec_id, g.generate_series AS pos,
-                   embedding[g.generate_series + 1] AS v
-            FROM embeddings, generate_series(0, 63) g),
-        codes AS (
-            SELECT vec_id,
-                   CAST(SUM(CASE WHEN v > 0 AND pos < 32
-                            THEN (CAST(1 AS BIGINT) << (pos % 32))
-                            ELSE 0 END) AS BIGINT) AS c0,
-                   CAST(SUM(CASE WHEN v > 0 AND pos >= 32
-                            THEN (CAST(1 AS BIGINT) << (pos % 32))
-                            ELSE 0 END) AS BIGINT) AS c1
-            FROM pe GROUP BY 1),
-        binr AS (
-            SELECT vec_id, hd, rank_bin FROM (
-                SELECT vec_id,
-                       bit_count(xor(c0, CAST({q0} AS BIGINT)))
-                       + bit_count(xor(c1, CAST({q1} AS BIGINT))) AS hd,
-                       ROW_NUMBER() OVER (ORDER BY
-                           bit_count(xor(c0, CAST({q0} AS BIGINT)))
-                           + bit_count(xor(c1, CAST({q1} AS BIGINT))),
-                           vec_id) AS rank_bin
-                FROM codes)
-            WHERE rank_bin <= 10),
-        full10 AS (
-            SELECT vec_id, rank_full FROM (
-                SELECT vec_id, ROW_NUMBER() OVER (ORDER BY
-                    ROUND(1.0 - list_cosine_similarity(
-                        list_transform(embedding, x -> CAST(x AS DOUBLE)),
-                        {QVEC_SQL}), 6), vec_id) AS rank_full
-                FROM embeddings)
-            WHERE rank_full <= 10)
-        SELECT COALESCE(f.vec_id, b.vec_id) AS vec_id, f.rank_full,
-               b.rank_bin, CAST(b.hd AS BIGINT) AS hd
-        FROM full10 f FULL OUTER JOIN binr b ON f.vec_id = b.vec_id
-    """
-
-
-_PSI_BINS = 10
-
-
-def q_psi_drift(spark, sf_dir):
-    """Population Stability Index — THE data-drift screen between two
-    slices of a feature distribution (here: even-day vs odd-day event
-    values per event type): 10 equal-width buckets over the slice-union
-    range, Laplace-smoothed shares, PSI contribution (p−q)·ln(p/q) per
-    bucket. At 100 TB both slices reduce to O(types × bins) partial-agg
-    state in ONE pass — the monitoring job a training pipeline runs per
-    ingestion batch (PSI > 0.2 = investigate)."""
-    ev = _read(spark, sf_dir, "events").select("event_type", "ts", "value")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86_400_000_000)
-    ).cast("long")
-    ev = ev.withColumn("par", (day % 2).cast("int"))
-    st = ev.groupBy("event_type").agg(
-        F.min("value").alias("mn"), F.max("value").alias("mx")
-    )
-    b = ev.join(F.broadcast(st), "event_type").withColumn(
-        "bucket",
-        F.when(
-            F.col("mx") > F.col("mn"),
-            F.least(
-                F.lit(_PSI_BINS - 1),
-                F.floor(
-                    (F.col("value") - F.col("mn"))
-                    / (F.col("mx") - F.col("mn"))
-                    * _PSI_BINS
-                ),
-            ),
-        )
-        .otherwise(F.lit(0))
-        .cast("long"),
-    )
-    cnt = b.groupBy("event_type", "bucket").agg(
-        F.sum(F.when(F.col("par") == 0, 1).otherwise(0)).alias("na"),
-        F.sum(F.when(F.col("par") == 1, 1).otherwise(0)).alias("nb"),
-    )
-    tot = cnt.groupBy("event_type").agg(
-        F.sum("na").alias("ta"), F.sum("nb").alias("tb")
-    )
-    j = cnt.join(F.broadcast(tot), "event_type")
-    p = (F.col("na") + 1).cast("double") / (F.col("ta") + _PSI_BINS)
-    q = (F.col("nb") + 1).cast("double") / (F.col("tb") + _PSI_BINS)
-    return j.select(
-        "event_type",
-        "bucket",
-        F.col("na").cast("long").alias("n_base"),
-        F.col("nb").cast("long").alias("n_cur"),
-        F.round((p - q) * F.log(p / q), 6).alias("psi"),
-    )
-
-
-def _psi_drift_sql() -> str:
-    return f"""
-        WITH ev AS (
-            SELECT event_type, value,
-                   CAST(CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) % 2
-                        AS INT) AS par
-            FROM events),
-        st AS (SELECT event_type, MIN(value) AS mn, MAX(value) AS mx
-               FROM ev GROUP BY 1),
-        b AS (
-            SELECT e.event_type, e.par,
-                   CASE WHEN s.mx > s.mn THEN LEAST({_PSI_BINS - 1},
-                        CAST(FLOOR((e.value - s.mn) / (s.mx - s.mn)
-                             * {_PSI_BINS}) AS BIGINT))
-                        ELSE 0 END AS bucket
-            FROM ev e JOIN st s ON e.event_type = s.event_type),
-        cnt AS (
-            SELECT event_type, bucket,
-                   SUM(CASE WHEN par = 0 THEN 1 ELSE 0 END) AS na,
-                   SUM(CASE WHEN par = 1 THEN 1 ELSE 0 END) AS nb
-            FROM b GROUP BY 1, 2),
-        tot AS (SELECT event_type, SUM(na) AS ta, SUM(nb) AS tb
-                FROM cnt GROUP BY 1)
-        SELECT c.event_type, c.bucket,
-               CAST(c.na AS BIGINT) AS n_base, CAST(c.nb AS BIGINT) AS n_cur,
-               ROUND((CAST(c.na + 1 AS DOUBLE) / (t.ta + {_PSI_BINS})
-                      - CAST(c.nb + 1 AS DOUBLE) / (t.tb + {_PSI_BINS}))
-                     * LN((CAST(c.na + 1 AS DOUBLE) / (t.ta + {_PSI_BINS}))
-                          / (CAST(c.nb + 1 AS DOUBLE) / (t.tb + {_PSI_BINS}))),
-                     6) AS psi
-        FROM cnt c JOIN tot t ON c.event_type = t.event_type
-    """
-
-
-def q_ks_two_sample(spark, sf_dir):
-    """Two-sample Kolmogorov-Smirnov distance between the even-day and
-    odd-day value distributions, per event type — the nonparametric drift
-    test next to PSI: D = max |F_a(x) − F_b(x)| over the pooled support,
-    computed as ONE cumulative window over the per-value count table
-    (never a sample×sample join). Exact-rational ECDFs in identical
-    doubles; reject flag at the α=0.05 asymptotic critical value."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_type", "ts", "value")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86_400_000_000)
-    ).cast("long")
-    cnt = (
-        ev.withColumn("par", (day % 2).cast("int"))
-        .groupBy("event_type", "value")
-        .agg(
-            F.sum(F.when(F.col("par") == 0, 1).otherwise(0)).alias("ca"),
-            F.sum(F.when(F.col("par") == 1, 1).otherwise(0)).alias("cb"),
-        )
-    )
-    w = Window.partitionBy("event_type").orderBy("value").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = cnt.withColumn("cuma", F.sum("ca").over(w)).withColumn(
-        "cumb", F.sum("cb").over(w)
-    )
-    tot = cnt.groupBy("event_type").agg(
-        F.sum("ca").cast("long").alias("na"), F.sum("cb").cast("long").alias("nb")
-    )
-    d = (
-        cum.join(F.broadcast(tot), "event_type")
-        .select(
-            "event_type",
-            "na",
-            "nb",
-            F.abs(
-                F.col("cuma").cast("double") / F.col("na")
-                - F.col("cumb").cast("double") / F.col("nb")
-            ).alias("diff"),
-        )
-        .groupBy("event_type", "na", "nb")
-        .agg(F.round(F.max("diff"), 6).alias("d_stat"))
-    )
-    crit = F.round(
-        F.lit(1.358)
-        * F.sqrt(
-            (F.col("na") + F.col("nb")).cast("double") / (F.col("na") * F.col("nb"))
-        ),
-        6,
-    )
-    return d.select(
-        "event_type",
-        "na",
-        "nb",
-        "d_stat",
-        crit.alias("crit_05"),
-        (F.col("d_stat") > crit).cast("int").alias("reject"),
-    )
-
-
-def _ks_two_sample_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT event_type, value,
-                   CAST(CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) % 2
-                        AS INT) AS par
-            FROM events),
-        cnt AS (
-            SELECT event_type, value,
-                   SUM(CASE WHEN par = 0 THEN 1 ELSE 0 END) AS ca,
-                   SUM(CASE WHEN par = 1 THEN 1 ELSE 0 END) AS cb
-            FROM ev GROUP BY 1, 2),
-        cum AS (
-            SELECT event_type, value,
-                   SUM(ca) OVER (PARTITION BY event_type ORDER BY value
-                                 ROWS UNBOUNDED PRECEDING) AS cuma,
-                   SUM(cb) OVER (PARTITION BY event_type ORDER BY value
-                                 ROWS UNBOUNDED PRECEDING) AS cumb
-            FROM cnt),
-        tot AS (
-            SELECT event_type, CAST(SUM(ca) AS BIGINT) AS na,
-                   CAST(SUM(cb) AS BIGINT) AS nb
-            FROM cnt GROUP BY 1),
-        d AS (
-            SELECT c.event_type, t.na, t.nb,
-                   ROUND(MAX(ABS(CAST(c.cuma AS DOUBLE) / t.na
-                                 - CAST(c.cumb AS DOUBLE) / t.nb)), 6) AS d_stat
-            FROM cum c JOIN tot t ON c.event_type = t.event_type
-            GROUP BY 1, 2, 3)
-        SELECT event_type, na, nb, d_stat,
-               ROUND(1.358 * SQRT(CAST(na + nb AS DOUBLE) / (na * nb)), 6)
-                 AS crit_05,
-               CAST(d_stat > ROUND(1.358 * SQRT(CAST(na + nb AS DOUBLE)
-                                                / (na * nb)), 6) AS INT)
-                 AS reject
-        FROM d
-    """
-
-
-# Fellegi-Sunter log2(m/u) agreement weights (literal design constants)
-_FS_W_SRC, _FS_W_LEN, _FS_W_JAC = 2.169925, 1.736966, 4.087463
-_FS_THRESHOLD = 4.0
-
-
-def q_fellegi_sunter(spark, sf_dir):
-    """Fellegi-Sunter record-linkage scoring over blocked candidates: the
-    probabilistic-ER decision model on top of the blocking the dedup suite
-    already provides. Blocking key = first 32 chars (exact-prefix block,
-    the duplicated corpus's natural key); per pair, three field
-    agreements — source equality, length-within-20, word-set Jaccard
-    ≥ 0.5 — each contributing its literal log2(m/u) weight; pairs above
-    the match threshold emit with their agreement pattern. Candidates are
-    ONE block equi-join (never doc×doc); the agreement tests are codegen
-    set/string ops."""
-    d = _read(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source", "n_chars"
-    )
-    dd = d.unionByName(
-        d.select(
-            (F.col("doc_id") + F.lit(1000000)).alias("doc_id"),
-            "text",
-            # perturb the twin's metadata so agreements are non-trivial
-            F.when(F.col("doc_id") % 3 == 0, F.lit("srcX")).otherwise(
-                F.col("source")
-            ).alias("source"),
-            (F.col("n_chars") + F.when(F.col("doc_id") % 5 == 0, 50).otherwise(0)
-             ).alias("n_chars"),
-        )
-    )
-    from raptor_service_spark.operators.dedup import words_col
-
-    blocked = dd.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        F.substring("text", 1, 32).alias("blk"),
-        F.array_distinct(words_col(F.col("text"))).alias("ws"),
-    )
-    a, b = blocked.alias("a"), blocked.alias("b")
-    pairs = a.join(
-        b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    )
-    inter = F.size(F.array_intersect(F.col("a.ws"), F.col("b.ws")))
-    uni = F.size(F.array_union(F.col("a.ws"), F.col("b.ws")))
-    agree_src = (F.col("a.source") == F.col("b.source")).cast("int")
-    agree_len = (
-        F.abs(F.col("a.n_chars") - F.col("b.n_chars")) < 20
-    ).cast("int")
-    agree_jac = (inter.cast("double") / uni >= 0.5).cast("int")
-    score = F.round(
-        agree_src * F.lit(_FS_W_SRC)
-        + agree_len * F.lit(_FS_W_LEN)
-        + agree_jac * F.lit(_FS_W_JAC),
-        6,
-    )
-    return (
-        pairs.select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            agree_src.alias("agree_src"),
-            agree_len.alias("agree_len"),
-            agree_jac.alias("agree_jac"),
-            score.alias("score"),
-        )
-        .filter(F.col("score") >= _FS_THRESHOLD)
-    )
-
-
-def _fellegi_sunter_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    return f"""
-        WITH dd AS (
-            SELECT doc_id, text, source, n_chars FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000 AS doc_id, text,
-                   CASE WHEN doc_id % 3 = 0 THEN 'srcX' ELSE source END AS source,
-                   n_chars + CASE WHEN doc_id % 5 = 0 THEN 50 ELSE 0 END
-                     AS n_chars
-            FROM documents),
-        blocked AS (
-            SELECT doc_id, source, n_chars, substr(text, 1, 32) AS blk,
-                   list_distinct({w}) AS ws
-            FROM dd),
-        pairs AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CASE WHEN a.source = b.source THEN 1 ELSE 0 END AS agree_src,
-                   CASE WHEN ABS(a.n_chars - b.n_chars) < 20 THEN 1 ELSE 0 END
-                     AS agree_len,
-                   CASE WHEN CAST(len(list_intersect(a.ws, b.ws)) AS DOUBLE)
-                             / len(list_distinct(list_concat(a.ws, b.ws)))
-                             >= 0.5 THEN 1 ELSE 0 END AS agree_jac
-            FROM blocked a JOIN blocked b
-              ON a.blk = b.blk AND a.doc_id < b.doc_id)
-        SELECT id_a, id_b, agree_src, agree_len, agree_jac,
-               ROUND(agree_src * CAST({_FS_W_SRC} AS DOUBLE)
-                     + agree_len * CAST({_FS_W_LEN} AS DOUBLE)
-                     + agree_jac * CAST({_FS_W_JAC} AS DOUBLE), 6) AS score
-        FROM pairs
-        WHERE ROUND(agree_src * CAST({_FS_W_SRC} AS DOUBLE)
-                    + agree_len * CAST({_FS_W_LEN} AS DOUBLE)
-                    + agree_jac * CAST({_FS_W_JAC} AS DOUBLE), 6)
-              >= {_FS_THRESHOLD}
-    """
-
-
-_SEAS_RES, _SEAS_MIN = 2, 48
-
-
-def q_cell_seasonal(spark, sf_dir):
-    """Hour-of-day seasonal occupancy profile per res-2 cell: seasonal
-    index = hod count / (cell mean per hour) — the diurnal fingerprint
-    that separates residential/commercial tiles and feeds anomaly
-    baselines. ONE (cell, hod) partial+final agg over the points; the
-    index divides by the per-cell total on the aggregated table (window,
-    no second scan). Exact integer counts; 6-dp index."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    hod = F.hour(F.col("ts").cast("timestamp")).cast("long")
-    cnt = (
-        ev.select(
-            cell_encode_col(lat, lng, _SEAS_RES).alias("cell"), hod.alias("hod")
-        )
-        .groupBy("cell", "hod")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("cell")
-    tot = F.sum("n").over(w)
-    return (
-        cnt.withColumn("cell_total", tot.cast("long"))
-        .filter(F.col("cell_total") >= _SEAS_MIN)
-        .select(
-            "cell",
-            "hod",
-            "n",
-            "cell_total",
-            F.round(
-                F.col("n").cast("double")
-                / (F.col("cell_total").cast("double") / 24.0),
-                6,
-            ).alias("seasonal_idx"),
-        )
-    )
-
-
-def _cell_seasonal_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _SEAS_RES)
-    return f"""
-        WITH cnt AS (
-            SELECT {cell} AS cell,
-                   CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hod,
-                   COUNT(*) AS n
-            FROM events GROUP BY 1, 2),
-        t AS (
-            SELECT cell, hod, n,
-                   CAST(SUM(n) OVER (PARTITION BY cell) AS BIGINT) AS cell_total
-            FROM cnt)
-        SELECT cell, hod, n, cell_total,
-               ROUND(CAST(n AS DOUBLE) / (CAST(cell_total AS DOUBLE) / 24.0), 6)
-                 AS seasonal_idx
-        FROM t WHERE cell_total >= {_SEAS_MIN}
-    """
-
-
-# ---------------------------------------------------------------------------
-# radiation OD model, A/B proportion test, BH-FDR hotspots, EWMA anomalies
-# ---------------------------------------------------------------------------
-
-_RAD_RES, _RAD_TOPC, _RAD_TOPK = 3, 24, 50
-
-
-def q_radiation_model(spark, sf_dir):
-    """Radiation model of spatial interaction (Simini et al. 2012) — the
-    parameter-free alternative to the gravity model the repo already
-    calibrates: predicted flow T_ij = m_i·(m_i·m_j) / ((m_i+s_ij)(m_i+m_j+s_ij))
-    where s_ij = total mass strictly closer to i than j is (excluding both
-    endpoints). Masses are res-3 cell occupancies; the intervening-
-    opportunity sum s_ij is a triple join that runs ENTIRELY on the
-    aggregated top-24-cell table (24³ ≈ 14k rows) — the points shuffle
-    once into the masses. Distances compare SQUARED center offsets (exact
-    float multiply/add — no rounding hazard in the strict < predicate)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cells = (
-        ev.select(cell_encode_col(lat, lng, _RAD_RES).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("m"))
-    )
-    top = (
-        cells.withColumn(
-            "rk",
-            F.row_number().over(Window.orderBy(F.col("m").desc(), F.col("cell"))),
-        )
-        .filter(F.col("rk") <= _RAD_TOPC)
-        .drop("rk")
-    )
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    n = 2**_RAD_RES
-    rem = F.col("cell") - F.lit(_RAD_RES * RES_MULTIPLIER)
-    cy = F.floor(rem / n).cast("long")
-    cx = rem - cy * n
-    ctr = top.withColumn(
-        "clat", -90.0 + (cy + 0.5) * 180.0 / n
-    ).withColumn("clng", -180.0 + (cx + 0.5) * 360.0 / n)
-    a, b, c = ctr.alias("a"), ctr.alias("b"), ctr.alias("c")
-
-    def d2(p, q):
-        dla = F.col(f"{p}.clat") - F.col(f"{q}.clat")
-        dln = F.col(f"{p}.clng") - F.col(f"{q}.clng")
-        return dla * dla + dln * dln
-
-    pairs = a.join(b, F.col("a.cell") != F.col("b.cell"))
-    sij = (
-        pairs.join(
-            c,
-            (F.col("c.cell") != F.col("a.cell"))
-            & (F.col("c.cell") != F.col("b.cell"))
-            & (d2("a", "c") < d2("a", "b")),
-            "left",
-        )
-        .groupBy(
-            F.col("a.cell").alias("cell_from"),
-            F.col("b.cell").alias("cell_to"),
-            F.col("a.m").alias("mi"),
-            F.col("b.m").alias("mj"),
-        )
-        .agg(F.coalesce(F.sum("c.m"), F.lit(0)).cast("long").alias("s_ij"))
-    )
-    t = (
-        F.col("mi").cast("double")
-        * (F.col("mi") * F.col("mj")).cast("double")
-        / (
-            (F.col("mi") + F.col("s_ij")).cast("double")
-            * (F.col("mi") + F.col("mj") + F.col("s_ij")).cast("double")
-        )
-    )
-    from pyspark.sql import Window as W2
-
-    out = sij.select(
-        "cell_from", "cell_to", "mi", "mj", "s_ij", F.round(t, 6).alias("t_rad")
-    )
-    w = W2.orderBy(F.col("t_rad").desc(), "cell_from", "cell_to")
-    return (
-        out.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= _RAD_TOPK)
-    )
-
-
-def _radiation_model_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_center_sql, cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _RAD_RES)
-    clat, clng = cell_center_sql("cell", _RAD_RES)
-    return f"""
-        WITH cells AS (
-            SELECT {cell} AS cell, COUNT(*) AS m FROM events GROUP BY 1),
-        top AS (
-            SELECT cell, m FROM (
-                SELECT cell, m,
-                       ROW_NUMBER() OVER (ORDER BY m DESC, cell) AS rk
-                FROM cells)
-            WHERE rk <= {_RAD_TOPC}),
-        ctr AS (
-            SELECT cell, m, {clat} AS clat, {clng} AS clng FROM top),
-        sij AS (
-            SELECT a.cell AS cell_from, b.cell AS cell_to,
-                   a.m AS mi, b.m AS mj,
-                   CAST(COALESCE(SUM(c.m), 0) AS BIGINT) AS s_ij
-            FROM ctr a JOIN ctr b ON a.cell != b.cell
-            LEFT JOIN ctr c
-              ON c.cell != a.cell AND c.cell != b.cell
-             AND (a.clat - c.clat) * (a.clat - c.clat)
-                 + (a.clng - c.clng) * (a.clng - c.clng)
-               < (a.clat - b.clat) * (a.clat - b.clat)
-                 + (a.clng - b.clng) * (a.clng - b.clng)
-            GROUP BY 1, 2, 3, 4),
-        scored AS (
-            SELECT cell_from, cell_to, mi, mj, s_ij,
-                   ROUND(CAST(mi AS DOUBLE) * CAST(mi * mj AS DOUBLE)
-                         / (CAST(mi + s_ij AS DOUBLE)
-                            * CAST(mi + mj + s_ij AS DOUBLE)), 6) AS t_rad
-            FROM sij)
-        SELECT cell_from, cell_to, mi, mj, s_ij, t_rad, rk FROM (
-            SELECT *, ROW_NUMBER() OVER (ORDER BY t_rad DESC, cell_from,
-                                         cell_to) AS rk
-            FROM scored)
-        WHERE rk <= {_RAD_TOPK}
-    """
-
-
-_AB_VALUE_CUT = 100.0
-
-
-def q_ab_proportions(spark, sf_dir):
-    """Two-proportion z-test per event type — the experimentation-analytics
-    primitive: even-day traffic is the control arm, odd-day the treatment,
-    success = value > 100; z = (p̂_a−p̂_b)/√(p̂(1−p̂)(1/n_a+1/n_b)) with the
-    pooled rate. ONE partial+final agg over the events; 9-dp pre-rounded
-    shares so both engines divide identical doubles; |z| > 1.96 flag."""
-    ev = _read(spark, sf_dir, "events").select("event_type", "ts", "value")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86_400_000_000)
-    ).cast("long")
-    ok = (F.col("value") > _AB_VALUE_CUT).cast("long")
-    agg = (
-        ev.withColumn("par", (day % 2).cast("int"))
-        .groupBy("event_type")
-        .agg(
-            F.sum(F.when(F.col("par") == 0, 1).otherwise(0)).cast("long").alias("na"),
-            F.sum(F.when(F.col("par") == 0, ok).otherwise(0)).cast("long").alias("xa"),
-            F.sum(F.when(F.col("par") == 1, 1).otherwise(0)).cast("long").alias("nb"),
-            F.sum(F.when(F.col("par") == 1, ok).otherwise(0)).cast("long").alias("xb"),
-        )
-    )
-    pa = F.col("xa").cast("double") / F.col("na")
-    pb = F.col("xb").cast("double") / F.col("nb")
-    pp = (F.col("xa") + F.col("xb")).cast("double") / (F.col("na") + F.col("nb"))
-    se = F.sqrt(pp * (1 - pp) * (1.0 / F.col("na") + 1.0 / F.col("nb")))
-    z = F.round((pa - pb) / se, 6)
-    return agg.select(
-        "event_type",
-        "na",
-        "xa",
-        "nb",
-        "xb",
-        F.round(pa, 6).alias("p_ctl"),
-        F.round(pb, 6).alias("p_trt"),
-        z.alias("z"),
-        (F.abs(z) > 1.96).cast("int").alias("significant"),
-    )
-
-
-def _ab_proportions_sql() -> str:
-    return f"""
-        WITH ev AS (
-            SELECT event_type, value,
-                   CAST(CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) % 2
-                        AS INT) AS par
-            FROM events),
-        agg AS (
-            SELECT event_type,
-                   CAST(SUM(CASE WHEN par = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-                   CAST(SUM(CASE WHEN par = 0 AND value > {_AB_VALUE_CUT}
-                            THEN 1 ELSE 0 END) AS BIGINT) AS xa,
-                   CAST(SUM(CASE WHEN par = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-                   CAST(SUM(CASE WHEN par = 1 AND value > {_AB_VALUE_CUT}
-                            THEN 1 ELSE 0 END) AS BIGINT) AS xb
-            FROM ev GROUP BY 1)
-        SELECT event_type, na, xa, nb, xb,
-               ROUND(CAST(xa AS DOUBLE) / na, 6) AS p_ctl,
-               ROUND(CAST(xb AS DOUBLE) / nb, 6) AS p_trt,
-               ROUND((CAST(xa AS DOUBLE) / na - CAST(xb AS DOUBLE) / nb)
-                     / SQRT((CAST(xa + xb AS DOUBLE) / (na + nb))
-                            * (1 - CAST(xa + xb AS DOUBLE) / (na + nb))
-                            * (1.0 / na + 1.0 / nb)), 6) AS z,
-               CAST(ABS(ROUND((CAST(xa AS DOUBLE) / na
-                               - CAST(xb AS DOUBLE) / nb)
-                     / SQRT((CAST(xa + xb AS DOUBLE) / (na + nb))
-                            * (1 - CAST(xa + xb AS DOUBLE) / (na + nb))
-                            * (1.0 / na + 1.0 / nb)), 6)) > 1.96 AS INT)
-                 AS significant
-        FROM agg
-    """
-
-
-_FDR_ALPHA = 0.05
-
-# Abramowitz-Stegun 26.2.17 normal upper-tail: ONE shared arithmetic string
-# evaluated as a Spark expression AND inside the DuckDB oracle (the repo's
-# shared-expression parity trick; `z` must be a non-negative expression).
-_AS_B = (0.319381530, -0.356563782, 1.781477937, -1.821255978, 1.330274429)
-
-
-def _phi_upper_sql(zexpr: str) -> str:
-    t = f"(1.0 / (1.0 + 0.2316419 * {zexpr}))"
-    poly = (
-        f"({_AS_B[0]} * {t} + {_AS_B[1]} * POWER({t}, 2) + {_AS_B[2]} * POWER({t}, 3)"
-        f" + {_AS_B[3]} * POWER({t}, 4) + {_AS_B[4]} * POWER({t}, 5))"
-    )
-    return f"(EXP(-({zexpr}) * ({zexpr}) / 2.0) / 2.5066282746310002 * {poly})"
-
-
-def q_fdr_hotspots(spark, sf_dir):
-    """Benjamini-Hochberg FDR correction over the Getis-Ord hot-spot field
-    — the multiple-testing discipline a production hot-spot monitor needs
-    (hundreds of cells tested simultaneously; per-cell α=0.05 would flag
-    ~5% of a CSR field). Per occupied cell: two-sided p from |gi_z| via
-    the shared A&S 26.2.17 polynomial (identical arithmetic string in
-    both engines), BH step-up at α=0.05 via ONE rank window + max-rank
-    threshold. Everything after the z-field runs on O(occupied cells)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.spatial_stats import getis_gi_star
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    z = getis_gi_star(
-        d.withColumn("lat", lat).withColumn("lng", lng), res=4, top_k=None
-    ).select("cell", "gi_z")
-    p = F.least(
-        F.round(2.0 * F.expr(_phi_upper_sql("ABS(gi_z)")), 6), F.lit(1.0)
-    )
-    scored = z.withColumn("p", p)
-    w = Window.orderBy("p", "cell")
-    ranked = scored.withColumn("rk", F.row_number().over(w).cast("long")).withColumn(
-        "m", F.count(F.lit(1)).over(Window.partitionBy())
-    )
-    flagged = ranked.withColumn(
-        "bh_ok",
-        (F.col("p") <= F.col("rk") * _FDR_ALPHA / F.col("m")).cast("int"),
-    )
-    kmax = flagged.agg(
-        F.coalesce(F.max(F.when(F.col("bh_ok") == 1, F.col("rk"))), F.lit(0))
-        .cast("long")
-        .alias("kmax")
-    )
-    return (
-        flagged.crossJoin(F.broadcast(kmax))
-        .select(
-            "cell",
-            "gi_z",
-            "p",
-            "rk",
-            (F.col("rk") <= F.col("kmax")).cast("int").alias("rejected"),
-        )
-    )
-
-
-def _fdr_hotspots_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import getis_gi_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    zsql = getis_gi_sql("documents", lat, lng, res=4, top_k=None)
-    pu = _phi_upper_sql("ABS(gi_z)")
-    return f"""
-        WITH zfield AS ({zsql}),
-        scored AS (
-            SELECT cell, gi_z,
-                   LEAST(ROUND(2.0 * {pu}, 6), 1.0) AS p
-            FROM zfield),
-        ranked AS (
-            SELECT cell, gi_z, p,
-                   ROW_NUMBER() OVER (ORDER BY p, cell) AS rk,
-                   COUNT(*) OVER () AS m
-            FROM scored),
-        kmax AS (
-            SELECT COALESCE(MAX(CASE WHEN p <= rk * {_FDR_ALPHA} / m
-                                     THEN rk END), 0) AS kmax
-            FROM ranked)
-        SELECT r.cell, r.gi_z, r.p, r.rk,
-               CAST(r.rk <= k.kmax AS INT) AS rejected
-        FROM ranked r CROSS JOIN kmax k
-    """
-
-
-_EWMA_RES, _EWMA_ALPHA, _EWMA_LB, _EWMA_TOPK = 2, 0.3, 24, 20
-
-
-def q_ewma_anomaly(spark, sf_dir):
-    """EWMA baseline anomaly screen per res-2 cell: hourly counts, baseline
-    = normalized Σ α(1−α)^(k−1)·x_(t−k) over the last 24 hours (closed-form
-    — the recurrence unrolled as 24 codegen lag terms over ONE cell-keyed
-    window; weights renormalize over the lags actually present), flag the
-    top-20 hours by count/baseline ratio. The online-monitoring twin of
-    trending_cells/cusum_cells with the textbook exponential baseline."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    hr = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(3_600_000_000)
-    ).cast("long")
-    cnt = (
-        ev.select(cell_encode_col(lat, lng, _EWMA_RES).alias("cell"), hr.alias("hr"))
-        .groupBy("cell", "hr")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("cell").orderBy("hr")
-    num = F.lit(0.0)
-    den = F.lit(0.0)
-    for k in range(1, _EWMA_LB + 1):
-        wk = _EWMA_ALPHA * (1.0 - _EWMA_ALPHA) ** (k - 1)
-        lagk = F.lag("n", k).over(w)
-        gap_ok = (F.col("hr") - F.lag("hr", k).over(w)) == k  # contiguous hours only
-        num = num + F.when(lagk.isNotNull() & gap_ok, F.lit(wk) * lagk).otherwise(0.0)
-        den = den + F.when(lagk.isNotNull() & gap_ok, F.lit(wk)).otherwise(0.0)
-    scored = cnt.withColumn(
-        "baseline", F.when(den > 0, F.round(num / den, 6))
-    ).withColumn(
-        "ratio",
-        F.when(
-            F.col("baseline") >= 1.0,
-            F.round(F.col("n") / F.col("baseline"), 6),
-        ),
-    )
-    top = Window.orderBy(F.col("ratio").desc(), "cell", "hr")
-    return (
-        scored.filter(F.col("ratio").isNotNull())
-        .withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= _EWMA_TOPK)
-        .select("cell", "hr", "n", "baseline", "ratio", "rk")
-    )
-
-
-def _ewma_anomaly_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _EWMA_RES)
-    num_terms, den_terms = [], []
-    for k in range(1, _EWMA_LB + 1):
-        wk = _EWMA_ALPHA * (1.0 - _EWMA_ALPHA) ** (k - 1)
-        lagn = f"LAG(n, {k}) OVER (PARTITION BY cell ORDER BY hr)"
-        laghr = f"LAG(hr, {k}) OVER (PARTITION BY cell ORDER BY hr)"
-        cond = f"{lagn} IS NOT NULL AND hr - {laghr} = {k}"
-        num_terms.append(f"CASE WHEN {cond} THEN {wk!r} * {lagn} ELSE 0.0 END")
-        den_terms.append(f"CASE WHEN {cond} THEN {wk!r} ELSE 0.0 END")
-    num = " + ".join(num_terms)
-    den = " + ".join(den_terms)
-    return f"""
-        WITH cnt AS (
-            SELECT {cell} AS cell,
-                   CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) AS hr,
-                   COUNT(*) AS n
-            FROM events GROUP BY 1, 2),
-        ew AS (
-            SELECT cell, hr, n, ({num}) AS num, ({den}) AS den FROM cnt),
-        scored AS (
-            SELECT cell, hr, n,
-                   CASE WHEN den > 0 THEN ROUND(num / den, 6) END AS baseline
-            FROM ew),
-        rated AS (
-            SELECT cell, hr, n, baseline,
-                   CASE WHEN baseline >= 1.0
-                        THEN ROUND(n / baseline, 6) END AS ratio
-            FROM scored)
-        SELECT cell, hr, n, baseline, ratio, rk FROM (
-            SELECT *, ROW_NUMBER() OVER (ORDER BY ratio DESC, cell, hr) AS rk
-            FROM rated WHERE ratio IS NOT NULL)
-        WHERE rk <= {_EWMA_TOPK}
-    """
-
-
-# ---------------------------------------------------------------------------
-# pseudo-relevance feedback, commute-flow inference, Chaikin smoothing
-# ---------------------------------------------------------------------------
-
-_PRF_FB_DOCS, _PRF_FB_TERMS, _PRF_TOPK = 5, 3, 10
-
-
-def q_prf_expansion(spark, sf_dir):
-    """Pseudo-relevance-feedback retrieval (Rocchio/RM3-lite) — the classic
-    two-pass IR loop completing the repo's retrieval stack (BM25 → hybrid
-    RRF → rerank → MMR → PRF): BM25 first pass, top-5 feedback docs, top-3
-    expansion terms by tf·idf from those docs (original terms and short
-    tokens excluded), then a SECOND BM25 pass over the expanded term set.
-    FULLY relational — the expansion terms stay a DataFrame (no driver
-    round-trip); the postings index builds ONCE (localCheckpoint, the
-    persisted-index stand-in) and feeds both passes, term stats, and the
-    expansion scorer. Output: final top-10 (doc_id, score)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import B, K1, doc_postings
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    post = doc_postings(docs).localCheckpoint(eager=False)
-    dlen = post.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    stats = dlen.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avg_dl"))
-    dfreq = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    denom = F.col("tf") + F.lit(K1) * (
-        F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.col("avg_dl")
-    )
-    contrib = idf * F.col("tf") * F.lit(K1 + 1.0) / denom
-
-    def bm25_pass(terms_df):
-        hit = post.join(F.broadcast(terms_df), "term")
-        return (
-            hit.join(F.broadcast(dfreq), "term")
-            .join(dlen, "doc_id")
-            .crossJoin(F.broadcast(stats))
-            .groupBy("doc_id")
-            .agg(F.round(F.sum(contrib), 6).alias("score"))
-        )
-
-    q0 = spark.createDataFrame([(t,) for t in _BM25_TERMS], "term string")
-    first = bm25_pass(q0)
-    fb = (
-        first.withColumn(
-            "rk",
-            F.row_number().over(Window.orderBy(F.col("score").desc(), "doc_id")),
-        )
-        .filter(F.col("rk") <= _PRF_FB_DOCS)
-        .select("doc_id")
-    )
-    exp_scored = (
-        post.join(F.broadcast(fb), "doc_id")
-        .groupBy("term")
-        .agg(F.sum("tf").alias("fb_tf"))
-        .join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .filter(~F.col("term").isin(list(_BM25_TERMS)) & (F.length("term") >= 3))
-        .select("term", F.round(F.col("fb_tf") * idf, 6).alias("escore"))
-    )
-    exp = (
-        exp_scored.withColumn(
-            "erk",
-            F.row_number().over(Window.orderBy(F.col("escore").desc(), "term")),
-        )
-        .filter(F.col("erk") <= _PRF_FB_TERMS)
-        .select("term")
-    )
-    second = bm25_pass(q0.unionByName(exp).distinct())
-    w = Window.orderBy(F.col("score").desc(), "doc_id")
-    return (
-        second.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= _PRF_TOPK)
-        .select("doc_id", "score", "rk")
-    )
-
-
-def _prf_expansion_sql() -> str:
-    from raptor_service_spark.operators.bm25 import B, K1, TOKEN_PATTERN
-
-    terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    idf = "ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))"
-    score_from = f"""
-        FROM post p
-        JOIN dfreq f USING (term)
-        JOIN dlen l USING (doc_id)
-        CROSS JOIN stats s"""
-    contrib = (
-        f"{idf} * p.tf * {K1 + 1.0} "
-        f"/ (p.tf + {K1} * ({1.0 - B} + {B} * l.dl / s.avg_dl))"
-    )
-    return f"""
-        WITH post AS (
-            SELECT doc_id, t.term, COUNT(*) AS tf
-            FROM documents,
-                 unnest(regexp_extract_all(lower(text),
-                        '{TOKEN_PATTERN}', 0)) AS t(term)
-            GROUP BY 1, 2),
-        dlen AS (SELECT doc_id, SUM(tf) AS dl FROM post GROUP BY 1),
-        stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avg_dl FROM dlen),
-        dfreq AS (SELECT term, COUNT(*) AS df FROM post GROUP BY 1),
-        first AS (
-            SELECT p.doc_id, ROUND(SUM({contrib}), 6) AS score
-            {score_from}
-            WHERE p.term IN ({terms})
-            GROUP BY 1),
-        fb AS (
-            SELECT doc_id FROM (
-                SELECT doc_id,
-                       ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rk
-                FROM first)
-            WHERE rk <= {_PRF_FB_DOCS}),
-        exp AS (
-            SELECT term FROM (
-                SELECT e.term,
-                       ROW_NUMBER() OVER (ORDER BY e.escore DESC, e.term) AS erk
-                FROM (
-                    SELECT p.term,
-                           ROUND(SUM(p.tf) * {idf}, 6) AS escore
-                    FROM post p
-                    JOIN fb USING (doc_id)
-                    JOIN dfreq f USING (term)
-                    CROSS JOIN stats s
-                    WHERE p.term NOT IN ({terms}) AND LENGTH(p.term) >= 3
-                    GROUP BY p.term, f.df, s.n_docs) e)
-            WHERE erk <= {_PRF_FB_TERMS}),
-        qexp AS (
-            SELECT DISTINCT term FROM (
-                SELECT unnest(ARRAY[{terms}]) AS term
-                UNION ALL SELECT term FROM exp)),
-        second AS (
-            SELECT p.doc_id, ROUND(SUM({contrib}), 6) AS score
-            {score_from}
-            JOIN qexp q ON p.term = q.term
-            GROUP BY 1)
-        SELECT doc_id, score, rk FROM (
-            SELECT doc_id, score,
-                   ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rk
-            FROM second)
-        WHERE rk <= {_PRF_TOPK}
-    """
-
-
-_COMMUTE_RES = 2
-
-
-def q_commute_flows(spark, sf_dir):
-    """Home→work commute-flow inference — the trip-chaining rollup on top
-    of the mobility block: per user, home = modal res-3 cell over night
-    hours (hod < 6 ∨ ≥ 20), work = modal cell over office hours
-    (9 ≤ hod < 17), flows aggregated over users with distinct home/work.
-    ONE point agg into (user, cell, daypart) counts; both argmaxes are
-    windows on that aggregated table."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    hod = F.hour(F.col("ts").cast("timestamp"))
-    part = F.when((hod < 6) | (hod >= 20), F.lit("home")).when(
-        (hod >= 9) & (hod < 17), F.lit("work")
-    )
-    cnt = (
-        ev.select(
-            "user_id",
-            cell_encode_col(lat, lng, _COMMUTE_RES).alias("cell"),
-            part.alias("part"),
-        )
-        .filter(F.col("part").isNotNull())
-        .groupBy("user_id", "part", "cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    w = Window.partitionBy("user_id", "part").orderBy(
-        F.col("n").desc(), F.col("cell").asc()
-    )
-    modal = cnt.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") == 1)
-    home = modal.filter(F.col("part") == "home").select(
-        "user_id", F.col("cell").alias("home_cell")
-    )
-    work = modal.filter(F.col("part") == "work").select(
-        "user_id", F.col("cell").alias("work_cell")
-    )
-    return (
-        home.join(work, "user_id")
-        .filter(F.col("home_cell") != F.col("work_cell"))
-        .groupBy("home_cell", "work_cell")
-        .agg(F.count(F.lit(1)).alias("n_commuters"))
-        .filter(F.col("n_commuters") >= 2)
-    )
-
-
-def _commute_flows_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _COMMUTE_RES)
-    return f"""
-        WITH ev AS (
-            SELECT user_id, {cell} AS cell,
-                   CASE WHEN EXTRACT(hour FROM ts) < 6
-                          OR EXTRACT(hour FROM ts) >= 20 THEN 'home'
-                        WHEN EXTRACT(hour FROM ts) >= 9
-                         AND EXTRACT(hour FROM ts) < 17 THEN 'work' END AS part
-            FROM events),
-        cnt AS (
-            SELECT user_id, part, cell, COUNT(*) AS n
-            FROM ev WHERE part IS NOT NULL GROUP BY 1, 2, 3),
-        modal AS (
-            SELECT user_id, part, cell FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, part
-                           ORDER BY n DESC, cell ASC) AS rk
-                FROM cnt)
-            WHERE rk = 1),
-        home AS (SELECT user_id, cell AS home_cell FROM modal
-                 WHERE part = 'home'),
-        work AS (SELECT user_id, cell AS work_cell FROM modal
-                 WHERE part = 'work')
-        SELECT h.home_cell, w.work_cell, COUNT(*) AS n_commuters
-        FROM home h JOIN work w USING (user_id)
-        WHERE h.home_cell != w.work_cell
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2
-    """
-
-
-_CHAIKIN_USERS = 8
-
-
-def q_chaikin_smooth(spark, sf_dir):
-    """Chaikin corner-cutting smoothing of user trajectories (the
-    cartographic smoothing dual of the VW simplifier already shipped):
-    each consecutive fix pair (P, N) yields Q = ¾P+¼N and R = ¼P+¾N,
-    ordered 2i/2i+1 — ONE user-keyed lead window + a 2-element inline
-    explode, pure codegen arithmetic (6-dp outputs)."""
-    from pyspark.sql import Window
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < _CHAIKIN_USERS)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select("user_id", "ts", "event_id", lat.alias("lat"), lng.alias("lng"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = pts.withColumn("i", F.row_number().over(w).cast("long")).withColumn(
-        "nlat", F.lead("lat").over(w)
-    ).withColumn("nlng", F.lead("lng").over(w)).filter(F.col("nlat").isNotNull())
-    qpt = F.struct(
-        (F.col("i") * 2).alias("seq"),
-        F.round(0.75 * F.col("lat") + 0.25 * F.col("nlat"), 6).alias("slat"),
-        F.round(0.75 * F.col("lng") + 0.25 * F.col("nlng"), 6).alias("slng"),
-    )
-    rpt = F.struct(
-        (F.col("i") * 2 + 1).alias("seq"),
-        F.round(0.25 * F.col("lat") + 0.75 * F.col("nlat"), 6).alias("slat"),
-        F.round(0.25 * F.col("lng") + 0.75 * F.col("nlng"), 6).alias("slng"),
-    )
-    return seq.select(
-        "user_id", F.explode(F.array(qpt, rpt)).alias("p")
-    ).select(
-        "user_id",
-        F.col("p.seq").alias("seq"),
-        F.col("p.slat").alias("slat"),
-        F.col("p.slng").alias("slng"),
-    )
-
-
-def _chaikin_smooth_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    return f"""
-        WITH pts AS (
-            SELECT user_id, ts, event_id, {lat} AS lat, {lng} AS lng
-            FROM events WHERE user_id < {_CHAIKIN_USERS}),
-        seq AS (
-            SELECT user_id,
-                   CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-                        ORDER BY ts, event_id) AS BIGINT) AS i,
-                   lat, lng,
-                   LEAD(lat) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS nlat,
-                   LEAD(lng) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS nlng
-            FROM pts),
-        pairs AS (SELECT * FROM seq WHERE nlat IS NOT NULL)
-        SELECT user_id, i * 2 AS seq,
-               ROUND(0.75 * lat + 0.25 * nlat, 6) AS slat,
-               ROUND(0.75 * lng + 0.25 * nlng, 6) AS slng
-        FROM pairs
-        UNION ALL
-        SELECT user_id, i * 2 + 1 AS seq,
-               ROUND(0.25 * lat + 0.75 * nlat, 6) AS slat,
-               ROUND(0.25 * lng + 0.75 * nlng, 6) AS slng
-        FROM pairs
     """
 
 
@@ -12302,1437 +3406,8 @@ def _media_ahash_dedup_sql(n_docs: int = 40, seed: int = 67) -> str:
 
 
 # ---------------------------------------------------------------------------
-# rank-biased overlap, Kaplan-Meier survival, difference-in-differences
+# content-defined chunking (CDC) dedup
 # ---------------------------------------------------------------------------
-
-_RBO_P, _RBO_DEPTH = 0.9, 20
-
-
-def q_rbo_rankings(spark, sf_dir):
-    """Rank-biased overlap (Webber et al. 2010) between the keyword (BM25)
-    and vector (cosine) top-20 rankings — the rank-similarity metric that
-    quantifies how much the two retrieval legs agree before fusing them
-    (the diagnostic hybrid_retrieval should be driven by). Truncated RBO:
-    Σ_{d=1..D} p^{d-1} · |A_d ∩ B_d| / d, computed relationally: both
-    rankings → depth join → per-depth overlap via two cumulative windows →
-    weighted sum (9-dp pre-round). Everything after the two top-k scans is
-    O(depth) rows."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import bm25_topk
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    kw = bm25_topk(docs, list(_BM25_TERMS), _RBO_DEPTH).select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("score").desc(), "doc_id"))
-        .alias("rka"),
-    )
-    e = _read(spark, sf_dir, "embeddings")
-    vec = (
-        e.withColumn("d", F.round(cosine_dist_col(F.col("embedding"), QVEC), 6))
-        .withColumn("rkb", F.row_number().over(Window.orderBy("d", "vec_id")))
-        .filter(F.col("rkb") <= _RBO_DEPTH)
-        .select(F.col("vec_id").alias("doc_id"), "rkb")
-    )
-    both = kw.join(vec, "doc_id")  # docs in BOTH rankings with their ranks
-    depths = spark.range(1, _RBO_DEPTH + 1).select(F.col("id").alias("d"))
-    overlap = (
-        depths.join(
-            both,
-            (F.col("rka") <= F.col("d")) & (F.col("rkb") <= F.col("d")),
-            "left",
-        )
-        .groupBy("d")
-        .agg(F.count(F.col("doc_id")).alias("x_d"))
-    )
-    wterm = F.round(
-        F.pow(F.lit(_RBO_P), F.col("d") - 1) * F.col("x_d") / F.col("d"), 9
-    )
-    return overlap.agg(
-        F.count(F.lit(1)).alias("depth"),
-        F.max(F.when(F.col("d") == _RBO_DEPTH, F.col("x_d")))
-        .cast("long")
-        .alias("overlap_at_k"),
-        F.round(F.round(F.sum(wterm), 9) * (1.0 - _RBO_P), 6).alias("rbo"),
-    )
-
-
-def _rbo_rankings_sql() -> str:
-    from raptor_service_spark.operators.bm25 import bm25_sql
-
-    kw = bm25_sql("documents", list(_BM25_TERMS), _RBO_DEPTH)
-    return f"""
-        WITH kw AS (
-            SELECT doc_id,
-                   ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rka
-            FROM ({kw})),
-        vec AS (
-            SELECT doc_id, rkb FROM (
-                SELECT vec_id AS doc_id,
-                       ROW_NUMBER() OVER (ORDER BY
-                           ROUND(1.0 - list_cosine_similarity(
-                               list_transform(embedding, x -> CAST(x AS DOUBLE)),
-                               {QVEC_SQL}), 6), vec_id) AS rkb
-                FROM embeddings)
-            WHERE rkb <= {_RBO_DEPTH}),
-        both_r AS (SELECT kw.doc_id, kw.rka, vec.rkb
-                   FROM kw JOIN vec USING (doc_id)),
-        overlap AS (
-            SELECT d.d, COUNT(b.doc_id) AS x_d
-            FROM range(1, {_RBO_DEPTH + 1}) d(d)
-            LEFT JOIN both_r b ON b.rka <= d.d AND b.rkb <= d.d
-            GROUP BY 1)
-        SELECT COUNT(*) AS depth,
-               CAST(MAX(CASE WHEN d = {_RBO_DEPTH} THEN x_d END) AS BIGINT)
-                 AS overlap_at_k,
-               ROUND(ROUND(SUM(ROUND(POWER({_RBO_P}, d - 1) * x_d / d, 9)), 9)
-                     * (1.0 - {_RBO_P}), 6) AS rbo
-        FROM overlap
-    """
-
-
-def q_kaplan_meier(spark, sf_dir):
-    """Kaplan-Meier survival curve of per-user inter-event gaps (time until
-    the next ping, hours) — survival analysis joins the analytics surface:
-    each user's LAST gap to the observation end is right-CENSORED; the
-    product-limit estimator S(t) = Π_{t_i ≤ t}(1 − d_i/n_i) runs as one
-    ordered window (risk set = n − cum(events+censored before t), survival
-    via exp∘cumsum∘ln with 9-dp pre-rounds). Output: the 25 largest event
-    times with S(t). Point rows shuffle ONCE into per-gap rows."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    endt = _read(spark, sf_dir, "events").agg(
-        F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("endu")
-    )
-    gaps = (
-        ev.select(
-            ts_us.alias("t0"),
-            F.lead(F.unix_micros(F.col("ts").cast("timestamp"))).over(w).alias("t1"),
-        )
-        .crossJoin(F.broadcast(endt))
-        .select(
-            F.when(
-                F.col("t1").isNotNull(),
-                F.round((F.col("t1") - F.col("t0")) / F.lit(3_600_000_000.0), 6),
-            )
-            .otherwise(
-                F.round((F.col("endu") - F.col("t0")) / F.lit(3_600_000_000.0), 6)
-            )
-            .alias("t"),
-            F.col("t1").isNotNull().cast("int").alias("event"),
-        )
-    )
-    per_t = gaps.groupBy("t").agg(
-        F.sum("event").cast("long").alias("d"),
-        F.count(F.lit(1)).cast("long").alias("obs"),
-    )
-    wt = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    km = (
-        per_t.withColumn(
-            "n_risk",
-            (
-                F.sum("obs").over(Window.partitionBy())
-                - F.coalesce(F.sum("obs").over(wt), F.lit(0))
-            ).cast("long"),
-        )
-        .filter(F.col("d") > 0)
-        .withColumn(
-            "lnterm",
-            # d == n_risk is the terminal time (everyone at risk dies):
-            # S hits exactly 0 there — ln(0) guarded, s overridden below
-            F.when(
-                F.col("d") < F.col("n_risk"),
-                F.round(
-                    F.log(1.0 - F.col("d") / F.col("n_risk").cast("double")), 9
-                ),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "s",
-            F.when(F.col("d") == F.col("n_risk"), F.lit(0.0)).otherwise(
-                F.round(
-                    F.exp(
-                        F.round(
-                            F.sum("lnterm").over(
-                                Window.orderBy("t").rowsBetween(
-                                    Window.unboundedPreceding, 0
-                                )
-                            ),
-                            9,
-                        )
-                    ),
-                    6,
-                )
-            ),
-        )
-    )
-    wtop = Window.orderBy(F.col("t").desc())
-    return (
-        km.withColumn("rk", F.row_number().over(wtop).cast("long"))
-        .filter(F.col("rk") <= 25)
-        .select("t", "d", "n_risk", "s", "rk")
-    )
-
-
-def _kaplan_meier_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT user_id, event_id, epoch_us(ts) AS u FROM events),
-        endt AS (SELECT MAX(u) AS endu FROM ev),
-        gaps AS (
-            SELECT CASE WHEN t1 IS NOT NULL
-                        THEN ROUND((t1 - t0) / 3600000000.0, 6)
-                        ELSE ROUND((endu - t0) / 3600000000.0, 6) END AS t,
-                   CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS event
-            FROM (
-                SELECT u AS t0,
-                       LEAD(u) OVER (PARTITION BY user_id
-                                     ORDER BY u, event_id) AS t1
-                FROM ev) g CROSS JOIN endt),
-        per_t AS (
-            SELECT t, CAST(SUM(event) AS BIGINT) AS d,
-                   CAST(COUNT(*) AS BIGINT) AS obs
-            FROM gaps GROUP BY 1),
-        tot AS (SELECT COUNT(*) AS n FROM gaps),
-        km AS (
-            SELECT t, d,
-                   CAST(n - COALESCE(SUM(obs) OVER (ORDER BY t
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                        AS BIGINT) AS n_risk,
-                   obs
-            FROM per_t CROSS JOIN tot),
-        surv AS (
-            SELECT t, d, n_risk,
-                   CASE WHEN d = n_risk THEN 0.0 ELSE
-                   ROUND(EXP(ROUND(SUM(CASE WHEN d < n_risk THEN
-                                       ROUND(LN(1.0 - CAST(d AS DOUBLE)
-                                                / n_risk), 9) ELSE 0.0 END)
-                        OVER (ORDER BY t
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW), 9)), 6) END AS s
-            FROM km WHERE d > 0)
-        SELECT t, d, n_risk, s, rk FROM (
-            SELECT *, ROW_NUMBER() OVER (ORDER BY t DESC) AS rk FROM surv)
-        WHERE rk <= 25
-    """
-
-
-def q_did_estimator(spark, sf_dir):
-    """Difference-in-differences — the workhorse causal estimator on the
-    2×2 (arm × period) design: arm = user parity (stable unit assignment),
-    period = first/second half of the observation window, outcome = mean
-    event value; DiD = (T₂−T₁) − (C₂−C₁) with 9-dp pre-rounded cell means.
-    ONE partial+final agg; the estimate assembles from 4 aggregated
-    cells."""
-    ev = _read(spark, sf_dir, "events").select("ts", "user_id", "value")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    bounds = ev.agg(
-        F.min(us).alias("lo"), F.max(us).alias("hi")
-    )
-    j = ev.crossJoin(F.broadcast(bounds))
-    period = (us >= (F.col("lo") + F.col("hi")) / 2).cast("int")
-    arm = (F.col("user_id") % 2).cast("int")
-    cells = (
-        j.select(arm.alias("arm"), period.alias("period"), "value")
-        .groupBy("arm", "period")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("value"), 9).alias("mean_val"),
-        )
-    )
-    pv = cells.groupBy().pivot("arm", [0, 1]).agg(
-        F.max(F.when(F.col("period") == 0, F.col("mean_val"))).alias("p0"),
-        F.max(F.when(F.col("period") == 1, F.col("mean_val"))).alias("p1"),
-    )
-    did = (F.col("1_p1") - F.col("1_p0")) - (F.col("0_p1") - F.col("0_p0"))
-    return pv.select(
-        F.round("0_p0", 6).alias("ctl_pre"),
-        F.round("0_p1", 6).alias("ctl_post"),
-        F.round("1_p0", 6).alias("trt_pre"),
-        F.round("1_p1", 6).alias("trt_post"),
-        F.round(did, 6).alias("did"),
-    )
-
-
-def _did_estimator_sql() -> str:
-    return """
-        WITH ev AS (SELECT user_id, value, epoch_us(ts) AS u FROM events),
-        bounds AS (SELECT MIN(u) AS lo, MAX(u) AS hi FROM ev),
-        cells AS (
-            SELECT CAST(user_id % 2 AS INT) AS arm,
-                   CAST(u >= (lo + hi) / 2 AS INT) AS period,
-                   ROUND(AVG(value), 9) AS mean_val
-            FROM ev CROSS JOIN bounds
-            GROUP BY 1, 2)
-        SELECT ROUND(MAX(CASE WHEN arm = 0 AND period = 0 THEN mean_val END),
-                     6) AS ctl_pre,
-               ROUND(MAX(CASE WHEN arm = 0 AND period = 1 THEN mean_val END),
-                     6) AS ctl_post,
-               ROUND(MAX(CASE WHEN arm = 1 AND period = 0 THEN mean_val END),
-                     6) AS trt_pre,
-               ROUND(MAX(CASE WHEN arm = 1 AND period = 1 THEN mean_val END),
-                     6) AS trt_post,
-               ROUND((MAX(CASE WHEN arm = 1 AND period = 1 THEN mean_val END)
-                      - MAX(CASE WHEN arm = 1 AND period = 0 THEN mean_val END))
-                     - (MAX(CASE WHEN arm = 0 AND period = 1 THEN mean_val END)
-                        - MAX(CASE WHEN arm = 0 AND period = 0 THEN mean_val
-                              END)), 6) AS did
-        FROM cells
-    """
-
-
-# ---------------------------------------------------------------------------
-# DP noisy release, join-size estimation, cross-track deviation
-# ---------------------------------------------------------------------------
-
-_DP_EPS, _DP_RES = 1.0, 3
-
-
-def q_dp_cell_counts(spark, sf_dir):
-    """Differentially-private cell-occupancy release (Laplace mechanism,
-    ε=1, sensitivity 1) with SEEDED noise: u = md5-uniform(cell) ∈ (0,1),
-    noise = −(1/ε)·sign(u−½)·ln(1−2|u−½|) — the deterministic-replay form
-    a pipeline uses so a re-run publishes the SAME release (fresh RNG
-    would burn privacy budget per run). Pairs with kanon_cells as the
-    privacy surface. ONE partial+final agg; noise is codegen arithmetic,
-    bit-identical in both engines (argument clamped away from ln(0))."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cnt = (
-        ev.select(cell_encode_col(lat, lng, _DP_RES).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_true"))
-    )
-    u = (
-        F.conv(F.substring(F.md5(F.col("cell").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        / F.lit(_KMV_DENOM)
-    )
-    centered = u - 0.5
-    mag = F.greatest(1.0 - 2.0 * F.abs(centered), F.lit(1e-12))
-    noise = (
-        F.lit(-1.0 / _DP_EPS) * F.signum(centered) * F.log(mag)
-    )
-    return cnt.select(
-        "cell",
-        "n_true",
-        F.round(F.col("n_true") + noise, 6).alias("n_noisy"),
-    )
-
-
-def _dp_cell_counts_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _DP_RES)
-    u = (
-        f"(('0x' || substr(md5(CAST(cell AS VARCHAR)), 1, 12))::BIGINT"
-        f" / {_KMV_DENOM})"
-    )
-    return f"""
-        WITH cnt AS (
-            SELECT {cell} AS cell, COUNT(*) AS n_true FROM events GROUP BY 1)
-        SELECT cell, n_true,
-               ROUND(n_true + (-1.0 / {_DP_EPS}) * SIGN({u} - 0.5)
-                     * LN(GREATEST(1.0 - 2.0 * ABS({u} - 0.5), 1e-12)), 6)
-                 AS n_noisy
-        FROM cnt
-    """
-
-
-_JSE_K = 64
-
-
-def q_join_size_estimate(spark, sf_dir):
-    """Join-cardinality estimation — the optimizer statistic behind every
-    join-reorder decision, computed the way a 100 TB engine must: the
-    self-join size |events ⋈ events| on user_id is Σ_u c_u² exactly (one
-    agg on aggregated counts), and the bottom-k (KMV) key sample estimates
-    it as (Σ_{sampled} c_u²)·D̂/k without ever touching the full key set —
-    the sketch the CBO ships between table stats. Output: exact vs
-    estimate vs key counts, one row."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("user_id")
-    cnt = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-    h = (
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        / F.lit(_KMV_DENOM)
-    )
-    ranked = cnt.withColumn("h", h).withColumn(
-        "rk", F.row_number().over(Window.orderBy("h", "user_id"))
-    )
-    agg = ranked.agg(
-        F.count(F.lit(1)).alias("n_keys"),
-        F.sum(F.col("c") * F.col("c")).cast("long").alias("exact_size"),
-        F.max(F.when(F.col("rk") == _JSE_K, F.col("h"))).alias("hk"),
-        F.sum(F.when(F.col("rk") <= _JSE_K, F.col("c") * F.col("c")).otherwise(0))
-        .cast("long")
-        .alias("sample_sum"),
-    )
-    d_hat = F.when(
-        F.col("hk").isNotNull(), F.round(F.lit(float(_JSE_K - 1)) / F.col("hk"), 6)
-    ).otherwise(F.col("n_keys").cast("double"))
-    est = F.round(
-        F.col("sample_sum")
-        * d_hat
-        / F.least(F.col("n_keys"), F.lit(_JSE_K)).cast("double"),
-        6,
-    )
-    return agg.select(
-        "n_keys", "exact_size", est.alias("est_size"),
-        F.round(d_hat, 6).alias("d_hat"),
-    )
-
-
-def _join_size_estimate_sql() -> str:
-    return f"""
-        WITH cnt AS (
-            SELECT user_id, COUNT(*) AS c FROM events GROUP BY 1),
-        ranked AS (
-            SELECT c, user_id,
-                   ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 12))::BIGINT
-                     / {_KMV_DENOM} AS h,
-                   ROW_NUMBER() OVER (ORDER BY
-                       ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1,
-                        12))::BIGINT / {_KMV_DENOM}, user_id) AS rk
-            FROM cnt),
-        agg AS (
-            SELECT COUNT(*) AS n_keys,
-                   CAST(SUM(c * c) AS BIGINT) AS exact_size,
-                   MAX(CASE WHEN rk = {_JSE_K} THEN h END) AS hk,
-                   CAST(SUM(CASE WHEN rk <= {_JSE_K} THEN c * c ELSE 0 END)
-                        AS BIGINT) AS sample_sum
-            FROM ranked)
-        SELECT n_keys, exact_size,
-               ROUND(sample_sum
-                     * (CASE WHEN hk IS NOT NULL
-                             THEN ROUND({float(_JSE_K - 1)} / hk, 6)
-                             ELSE CAST(n_keys AS DOUBLE) END)
-                     / CAST(LEAST(n_keys, {_JSE_K}) AS DOUBLE), 6) AS est_size,
-               ROUND(CASE WHEN hk IS NOT NULL
-                          THEN ROUND({float(_JSE_K - 1)} / hk, 6)
-                          ELSE CAST(n_keys AS DOUBLE) END, 6) AS d_hat
-        FROM agg
-    """
-
-
-_XT_USERS = 40
-
-
-def q_crosstrack_deviation(spark, sf_dir):
-    """Cross-track (route-deviation) screen: per user, the great-circle
-    route from first to last fix and the maximum spherical cross-track
-    distance of the intermediate fixes — the corridor-compliance check in
-    fleet/flight analytics: xt = asin(sin(δ₁₃)·sin(θ₁₃−θ₁₂))·R with δ from
-    the haversine triplet and θ the initial bearings. ONE user-keyed
-    window (first/last endpoints) + codegen trig; top-20 users by
-    deviation."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.distance import EARTH_RADIUS_KM, haversine_col
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < _XT_USERS)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select("user_id", "ts", "event_id", lat.alias("lat"), lng.alias("lng"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    withends = (
-        pts.withColumn("alat", F.first("lat").over(w))
-        .withColumn("alng", F.first("lng").over(w))
-        .withColumn("blat", F.last("lat").over(w))
-        .withColumn("blng", F.last("lng").over(w))
-    )
-
-    def bearing(lat1, lng1, lat2, lng2):
-        p1, p2 = F.radians(lat1), F.radians(lat2)
-        dl = F.radians(lng2 - lng1)
-        return F.atan2(
-            F.sin(dl) * F.cos(p2),
-            F.cos(p1) * F.sin(p2) - F.sin(p1) * F.cos(p2) * F.cos(dl),
-        )
-
-    d13 = haversine_col(
-        F.col("alat"), F.col("alng"), F.col("lat"), F.col("lng")
-    ) / F.lit(EARTH_RADIUS_KM)
-    t13 = bearing(F.col("alat"), F.col("alng"), F.col("lat"), F.col("lng"))
-    t12 = bearing(F.col("alat"), F.col("alng"), F.col("blat"), F.col("blng"))
-    xt = F.abs(
-        F.asin(F.sin(d13) * F.sin(t13 - t12)) * F.lit(EARTH_RADIUS_KM)
-    )
-    per = (
-        withends.select("user_id", F.round(xt, 6).alias("xt"))
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_fixes"),
-            F.max("xt").alias("max_xt_km"),
-        )
-    )
-    top = Window.orderBy(F.col("max_xt_km").desc(), "user_id")
-    return (
-        per.withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= 20)
-    )
-
-
-def _crosstrack_deviation_sql() -> str:
-    from raptor_service_spark.geo.distance import EARTH_RADIUS_KM, haversine_sql
-
-    lat, lng = _latlng_sql("event_id")
-    hav = haversine_sql("alat", "alng", "lat", "lng")
-
-    def bearing(lat1, lng1, lat2, lng2):
-        return (
-            f"atan2(sin(radians({lng2} - {lng1})) * cos(radians({lat2})), "
-            f"cos(radians({lat1})) * sin(radians({lat2})) "
-            f"- sin(radians({lat1})) * cos(radians({lat2})) "
-            f"* cos(radians({lng2} - {lng1})))"
-        )
-
-    t13 = bearing("alat", "alng", "lat", "lng")
-    t12 = bearing("alat", "alng", "blat", "blng")
-    xt = (
-        f"ABS(asin(sin({hav} / {EARTH_RADIUS_KM}) * sin({t13} - {t12})) "
-        f"* {EARTH_RADIUS_KM})"
-    )
-    return f"""
-        WITH pts AS (
-            SELECT user_id, ts, event_id, {lat} AS lat, {lng} AS lng
-            FROM events WHERE user_id < {_XT_USERS}),
-        we AS (
-            SELECT user_id, lat, lng,
-                   FIRST_VALUE(lat) OVER uw AS alat,
-                   FIRST_VALUE(lng) OVER uw AS alng,
-                   LAST_VALUE(lat) OVER uw AS blat,
-                   LAST_VALUE(lng) OVER uw AS blng
-            FROM pts
-            WINDOW uw AS (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND UNBOUNDED FOLLOWING)),
-        per AS (
-            SELECT user_id, COUNT(*) AS n_fixes,
-                   MAX(ROUND({xt}, 6)) AS max_xt_km
-            FROM we GROUP BY 1)
-        SELECT user_id, n_fixes, max_xt_km, rk FROM (
-            SELECT *, ROW_NUMBER() OVER (ORDER BY max_xt_km DESC, user_id)
-                   AS rk
-            FROM per)
-        WHERE rk <= 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# Shapley attribution, query-likelihood retrieval, nDCG ranking quality
-# ---------------------------------------------------------------------------
-
-_SHAP_LOOKBACK_US = 3600 * 1_000_000
-
-
-def q_shapley_attribution(spark, sf_dir):
-    """Channel attribution by simplified Shapley value (Zhao et al. 2018):
-    each purchase's journey = the DISTINCT set of non-purchase event types
-    the user touched in the preceding hour; conversions with touch-set S
-    split credit equally across S's members (φ_i = Σ_{S∋i} v(S)/|S| — the
-    exact Shapley value when v is additive over journeys, which this
-    construction makes it). The marketing-analytics replacement for
-    last-touch. Shape: one as-of-style range join bounded by the lookback
-    window, one set agg per conversion, one explode over O(conversions ×
-    |S|≤4) rows."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    conv = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("cid"), F.col("user_id").alias("cu"), us.alias("cu_ts")
-    )
-    touch = ev.filter(F.col("event_type") != "purchase").select(
-        F.col("user_id").alias("tu"), us.alias("t_ts"), F.col("event_type").alias("ch")
-    )
-    j = conv.join(
-        touch,
-        (F.col("cu") == F.col("tu"))
-        & (F.col("t_ts") < F.col("cu_ts"))
-        & (F.col("t_ts") >= F.col("cu_ts") - F.lit(_SHAP_LOOKBACK_US)),
-    )
-    sets = j.groupBy("cid").agg(
-        F.array_sort(F.collect_set("ch")).alias("chset")
-    )
-    per_set = sets.groupBy("chset").agg(F.count(F.lit(1)).alias("v"))
-    exploded = per_set.select(
-        F.explode("chset").alias("channel"),
-        (F.col("v") / F.size("chset")).alias("share"),
-        "v",
-    )
-    return (
-        exploded.groupBy("channel")
-        .agg(
-            F.round(F.round(F.sum("share"), 9), 6).alias("phi"),
-            F.sum("v").cast("long").alias("n_journeys"),
-        )
-    )
-
-
-def _shapley_attribution_sql() -> str:
-    return f"""
-        WITH ev AS (
-            SELECT event_id, user_id, event_type, epoch_us(ts) AS u
-            FROM events),
-        conv AS (
-            SELECT event_id AS cid, user_id AS cu, u AS cu_ts
-            FROM ev WHERE event_type = 'purchase'),
-        touch AS (
-            SELECT user_id AS tu, u AS t_ts, event_type AS ch
-            FROM ev WHERE event_type != 'purchase'),
-        sets AS (
-            SELECT c.cid,
-                   list_sort(list_distinct(list(t.ch))) AS chset
-            FROM conv c JOIN touch t
-              ON c.cu = t.tu AND t.t_ts < c.cu_ts
-             AND t.t_ts >= c.cu_ts - {_SHAP_LOOKBACK_US}
-            GROUP BY 1),
-        per_set AS (
-            SELECT chset, COUNT(*) AS v FROM sets GROUP BY 1),
-        exploded AS (
-            SELECT unnest(chset) AS channel,
-                   CAST(v AS DOUBLE) / len(chset) AS share, v
-            FROM per_set)
-        SELECT channel,
-               ROUND(ROUND(SUM(share), 9), 6) AS phi,
-               CAST(SUM(v) AS BIGINT) AS n_journeys
-        FROM exploded GROUP BY 1
-    """
-
-
-_QL_MU = 2000.0
-
-
-def q_ql_dirichlet(spark, sf_dir):
-    """Query-likelihood retrieval with Dirichlet smoothing (Zhai-Lafferty)
-    — the language-modeling ranking next to BM25, completing the classic
-    IR model family: score(d) = Σ_q ln((tf + μ·p_c(q)) / (dl + μ)) with
-    the collection model p_c broadcast. Same one-postings-shuffle shape as
-    BM25; top-10."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import doc_postings
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    post = doc_postings(docs).localCheckpoint(eager=False)
-    dlen = post.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    coll = post.groupBy("term").agg(F.sum("tf").alias("cf"))
-    tot = post.agg(F.sum("tf").alias("ctot"))
-    qt = spark.createDataFrame([(t,) for t in _BM25_TERMS], "term string")
-    # every query term for every doc (missing -> tf=0 via left join)
-    grid = dlen.crossJoin(F.broadcast(qt))
-    hit = grid.join(post, ["doc_id", "term"], "left").fillna({"tf": 0})
-    scored = (
-        hit.join(F.broadcast(coll), "term")
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "contrib",
-            F.round(
-                F.log(
-                    (F.col("tf") + _QL_MU * F.col("cf") / F.col("ctot"))
-                    / (F.col("dl") + _QL_MU)
-                ),
-                9,
-            ),
-        )
-    )
-    per = scored.groupBy("doc_id").agg(
-        F.round(F.round(F.sum("contrib"), 9), 6).alias("score")
-    )
-    w = Window.orderBy(F.col("score").desc(), "doc_id")
-    return (
-        per.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 10)
-    )
-
-
-def _ql_dirichlet_sql() -> str:
-    from raptor_service_spark.operators.bm25 import TOKEN_PATTERN
-
-    terms = ", ".join(f"('{t}')" for t in _BM25_TERMS)
-    return f"""
-        WITH post AS (
-            SELECT doc_id, t.term, COUNT(*) AS tf
-            FROM documents,
-                 unnest(regexp_extract_all(lower(text),
-                        '{TOKEN_PATTERN}', 0)) AS t(term)
-            GROUP BY 1, 2),
-        dlen AS (SELECT doc_id, SUM(tf) AS dl FROM post GROUP BY 1),
-        coll AS (SELECT term, SUM(tf) AS cf FROM post GROUP BY 1),
-        tot AS (SELECT SUM(tf) AS ctot FROM post),
-        qt(term) AS (VALUES {terms}),
-        grid AS (SELECT d.doc_id, d.dl, q.term FROM dlen d CROSS JOIN qt q),
-        hit AS (
-            SELECT g.doc_id, g.dl, g.term, COALESCE(p.tf, 0) AS tf
-            FROM grid g LEFT JOIN post p
-              ON g.doc_id = p.doc_id AND g.term = p.term),
-        scored AS (
-            SELECT h.doc_id,
-                   ROUND(LN((h.tf + {_QL_MU} * c.cf / s.ctot)
-                            / (h.dl + {_QL_MU})), 9) AS contrib
-            FROM hit h JOIN coll c ON h.term = c.term CROSS JOIN tot s),
-        per AS (
-            SELECT doc_id, ROUND(ROUND(SUM(contrib), 9), 6) AS score
-            FROM scored GROUP BY 1)
-        SELECT doc_id, score, rk FROM (
-            SELECT doc_id, score,
-                   ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rk
-            FROM per)
-        WHERE rk <= 10
-    """
-
-
-_NDCG_K = 10
-
-
-def q_ndcg_bm25(spark, sf_dir):
-    """nDCG@10 of the BM25 ranking against graded relevance = the doc
-    quality score (the repo's deterministic stand-in for judgments) — the
-    ranking-quality metric that closes the IR loop (retrieve → rerank →
-    EVALUATE): DCG = Σ rel_i/log2(i+1) over the ranking, IDCG from the
-    top-k relevance grades corpus-wide, one row out. All O(k) after the
-    top-k scan + one corpus-wide relevance rank."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import bm25_topk
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    rel = docs.select(
-        "doc_id", F.round(quality_score(F.col("text")), 6).alias("rel")
-    )
-    ranked = bm25_topk(docs, list(_BM25_TERMS), _NDCG_K).select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("score").desc(), "doc_id"))
-        .alias("pos"),
-    )
-    dcg = (
-        ranked.join(rel, "doc_id")
-        .select(
-            F.round(
-                F.col("rel") / F.log2(F.col("pos") + 1), 9
-            ).alias("g")
-        )
-        .agg(F.round(F.sum("g"), 9).alias("dcg"))
-    )
-    ideal = (
-        rel.withColumn(
-            "pos", F.row_number().over(Window.orderBy(F.col("rel").desc(), "doc_id"))
-        )
-        .filter(F.col("pos") <= _NDCG_K)
-        .select(F.round(F.col("rel") / F.log2(F.col("pos") + 1), 9).alias("g"))
-        .agg(F.round(F.sum("g"), 9).alias("idcg"))
-    )
-    return dcg.crossJoin(ideal).select(
-        F.round("dcg", 6).alias("dcg"),
-        F.round("idcg", 6).alias("idcg"),
-        F.round(F.col("dcg") / F.col("idcg"), 6).alias("ndcg"),
-    )
-
-
-def _ndcg_bm25_sql() -> str:
-    from raptor_service_spark.functions.text import quality_score_sql
-    from raptor_service_spark.operators.bm25 import bm25_sql
-
-    kw = bm25_sql("documents", list(_BM25_TERMS), _NDCG_K)
-    rel = quality_score_sql("text")
-    return f"""
-        WITH rel AS (
-            SELECT doc_id, ROUND({rel}, 6) AS rel FROM documents),
-        ranked AS (
-            SELECT doc_id,
-                   ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS pos
-            FROM ({kw})),
-        dcg AS (
-            SELECT ROUND(SUM(ROUND(r.rel / log2(ranked.pos + 1), 9)), 9)
-                     AS dcg
-            FROM ranked JOIN rel r USING (doc_id)),
-        ideal AS (
-            SELECT ROUND(SUM(ROUND(rel / log2(pos + 1), 9)), 9) AS idcg
-            FROM (
-                SELECT rel,
-                       ROW_NUMBER() OVER (ORDER BY rel DESC, doc_id) AS pos
-                FROM rel)
-            WHERE pos <= {_NDCG_K})
-        SELECT ROUND(dcg, 6) AS dcg, ROUND(idcg, 6) AS idcg,
-               ROUND(dcg / idcg, 6) AS ndcg
-        FROM dcg CROSS JOIN ideal
-    """
-
-
-# ---------------------------------------------------------------------------
-# Mann-Whitney U, BM25 MRR/MAP evaluation, chi-square independence
-# ---------------------------------------------------------------------------
-
-_MW_A, _MW_B = "purchase", "click"
-
-
-def q_mann_whitney(spark, sf_dir):
-    """Mann-Whitney U rank-sum test between the 'purchase' and 'click'
-    value distributions — the nonparametric two-sample location test next
-    to the existing KS drift test (distribution-shape) and the parametric
-    A/B z-test. Computed relationally from the per-value count table
-    (never a rank-per-row window over raw samples): the average rank of a
-    tied value v is c_less(v) + (t_v + 1)/2, R_a = Σ ca·r̄, U = R_a −
-    na(na+1)/2, with the exact tie-corrected variance
-    na·nb/12·((n+1) − Σ(t³−t)/(n(n−1))). One shuffle on value; all
-    rank arithmetic is multiples of 0.5 so the double sums are exact.
-    Reference analog: the drift screens next to retrieval quality,
-    services/core/build_tree_service.py preflight stats."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").filter(
-        F.col("event_type").isin([_MW_A, _MW_B])
-    )
-    cnt = ev.groupBy("value").agg(
-        F.sum(F.when(F.col("event_type") == _MW_A, 1).otherwise(0)).alias("ca"),
-        F.sum(F.when(F.col("event_type") == _MW_B, 1).otherwise(0)).alias("cb"),
-    )
-    w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = cnt.withColumn(
-        "c_less", F.coalesce(F.sum(F.col("ca") + F.col("cb")).over(w), F.lit(0))
-    ).withColumn(
-        "rbar",
-        F.col("c_less").cast("double")
-        + (F.col("ca") + F.col("cb") + 1).cast("double") / 2.0,
-    )
-    agg = ranked.agg(
-        F.sum("ca").cast("long").alias("na"),
-        F.sum("cb").cast("long").alias("nb"),
-        F.sum(F.col("ca") * F.col("rbar")).alias("ra"),
-        F.sum(
-            F.pow(F.col("ca") + F.col("cb"), 3) - (F.col("ca") + F.col("cb"))
-        ).alias("tie"),
-    )
-    n = F.col("na") + F.col("nb")
-    u = F.col("ra") - F.col("na").cast("double") * (F.col("na") + 1) / 2.0
-    mean_u = F.col("na").cast("double") * F.col("nb") / 2.0
-    var_u = (
-        F.col("na").cast("double")
-        * F.col("nb")
-        / 12.0
-        * ((n + 1).cast("double") - F.col("tie") / (n * (n - 1)).cast("double"))
-    )
-    z = F.round((u - mean_u) / F.sqrt(var_u), 6)
-    return agg.select(
-        "na",
-        "nb",
-        F.round(u, 6).alias("u_stat"),
-        z.alias("z"),
-        (F.abs(z) > 1.96).cast("int").alias("reject_05"),
-    )
-
-
-def _mann_whitney_sql() -> str:
-    return f"""
-        WITH ev AS (
-            SELECT event_type, value FROM events
-            WHERE event_type IN ('{_MW_A}', '{_MW_B}')),
-        cnt AS (
-            SELECT value,
-                   SUM(CASE WHEN event_type = '{_MW_A}' THEN 1 ELSE 0 END) AS ca,
-                   SUM(CASE WHEN event_type = '{_MW_B}' THEN 1 ELSE 0 END) AS cb
-            FROM ev GROUP BY 1),
-        ranked AS (
-            SELECT ca, cb,
-                   COALESCE(SUM(ca + cb) OVER (ORDER BY value
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                       0) AS c_less
-            FROM cnt),
-        agg AS (
-            SELECT CAST(SUM(ca) AS BIGINT) AS na,
-                   CAST(SUM(cb) AS BIGINT) AS nb,
-                   SUM(ca * (c_less + (ca + cb + 1) / 2.0)) AS ra,
-                   SUM(POW(ca + cb, 3) - (ca + cb)) AS tie
-            FROM ranked)
-        SELECT na, nb,
-               ROUND(ra - na * (na + 1) / 2.0, 6) AS u_stat,
-               ROUND((ra - na * (na + 1) / 2.0 - na * nb / 2.0)
-                     / SQRT(na * CAST(nb AS DOUBLE) / 12.0
-                            * ((na + nb + 1)
-                               - tie / (CAST(na + nb AS DOUBLE)
-                                        * (na + nb - 1)))), 6) AS z,
-               CAST(ABS((ra - na * (na + 1) / 2.0 - na * nb / 2.0)
-                     / SQRT(na * CAST(nb AS DOUBLE) / 12.0
-                            * ((na + nb + 1)
-                               - tie / (CAST(na + nb AS DOUBLE)
-                                        * (na + nb - 1))))) > 1.96
-                    AS INT) AS reject_05
-        FROM agg
-    """
-
-
-_REL_T = 0.95
-_EVAL_K = 10
-
-
-def q_bm25_eval(spark, sf_dir):
-    """MRR and MAP@10 / recall@10 of the BM25 ranking against binary
-    relevance (quality_score ≥ 0.95, ~top-15% of the corpus) — completes
-    the ranking-evaluation family next to nDCG (graded) and RBO
-    (rank-vs-rank): MRR = 1/pos of the first relevant hit, AP@10 =
-    Σ_rel precision@i / min(R, 10). O(k) after the top-k scan plus one
-    corpus-wide relevance count."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import bm25_topk
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    rel = docs.select(
-        "doc_id", (quality_score(F.col("text")) >= _REL_T).cast("int").alias("rel")
-    )
-    r_tot = rel.agg(F.sum("rel").cast("long").alias("r_total"))
-    ranked = bm25_topk(docs, list(_BM25_TERMS), _EVAL_K).select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("score").desc(), "doc_id"))
-        .alias("pos"),
-    )
-    hits = ranked.join(rel, "doc_id")
-    w = Window.orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)
-    prec = hits.withColumn("cum_rel", F.sum("rel").over(w)).withColumn(
-        "p_at_i",
-        F.when(
-            F.col("rel") == 1,
-            F.round(F.col("cum_rel").cast("double") / F.col("pos"), 9),
-        ).otherwise(F.lit(0.0)),
-    )
-    agg = prec.agg(
-        F.coalesce(
-            F.round(1.0 / F.min(F.when(F.col("rel") == 1, F.col("pos"))), 6),
-            F.lit(0.0),
-        ).alias("mrr"),
-        F.sum("p_at_i").alias("sum_p"),
-        F.sum("rel").cast("long").alias("n_rel_topk"),
-    )
-    return agg.crossJoin(r_tot).select(
-        "mrr",
-        F.round(
-            F.col("sum_p") / F.least(F.col("r_total"), F.lit(_EVAL_K)).cast("double"),
-            6,
-        ).alias("ap10"),
-        F.round(F.col("n_rel_topk").cast("double") / F.col("r_total"), 6).alias(
-            "recall10"
-        ),
-        "n_rel_topk",
-        "r_total",
-    )
-
-
-def _bm25_eval_sql() -> str:
-    from raptor_service_spark.functions.text import quality_score_sql
-    from raptor_service_spark.operators.bm25 import bm25_sql
-
-    kw = bm25_sql("documents", list(_BM25_TERMS), _EVAL_K)
-    qs = quality_score_sql("text")
-    return f"""
-        WITH rel AS (
-            SELECT doc_id,
-                   CASE WHEN {qs} >= {_REL_T} THEN 1 ELSE 0 END AS rel
-            FROM documents),
-        r_tot AS (SELECT CAST(SUM(rel) AS BIGINT) AS r_total FROM rel),
-        ranked AS (
-            SELECT doc_id,
-                   ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS pos
-            FROM ({kw})),
-        hits AS (
-            SELECT r.pos, l.rel FROM ranked r JOIN rel l USING (doc_id)),
-        prec AS (
-            SELECT pos, rel,
-                   CASE WHEN rel = 1 THEN
-                       ROUND(CAST(SUM(rel) OVER (ORDER BY pos
-                                 ROWS UNBOUNDED PRECEDING) AS DOUBLE) / pos, 9)
-                   ELSE 0.0 END AS p_at_i
-            FROM hits),
-        agg AS (
-            SELECT COALESCE(ROUND(1.0 / MIN(CASE WHEN rel = 1 THEN pos END),
-                                  6), 0.0) AS mrr,
-                   SUM(p_at_i) AS sum_p,
-                   CAST(SUM(rel) AS BIGINT) AS n_rel_topk
-            FROM prec)
-        SELECT mrr,
-               ROUND(sum_p / LEAST(r_total, {_EVAL_K}), 6) AS ap10,
-               ROUND(CAST(n_rel_topk AS DOUBLE) / r_total, 6) AS recall10,
-               n_rel_topk, r_total
-        FROM agg CROSS JOIN r_tot
-    """
-
-
-def q_chi2_independence(spark, sf_dir):
-    """Chi-square test of independence between event_type and day-of-week
-    (UTC, epoch-day mod 7) with Cramér's V effect size — the categorical
-    counterpart of the numeric two-sample screens (KS, Mann-Whitney):
-    χ² = Σ (o − e)²/e over the r×c contingency table with expected
-    counts from the margins. One count shuffle; the table itself is
-    O(r·c) = O(35) rows, margins broadcast."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_type",
-        (
-            F.floor(F.unix_micros(F.col("ts").cast("timestamp")) / 86_400_000_000)
-            % 7
-        )
-        .cast("int")
-        .alias("dow"),
-    )
-    obs = ev.groupBy("event_type", "dow").agg(F.count(F.lit(1)).alias("o"))
-    row_t = obs.groupBy("event_type").agg(F.sum("o").alias("rt"))
-    col_t = obs.groupBy("dow").agg(F.sum("o").alias("ct"))
-    tot = obs.agg(
-        F.sum("o").alias("n"),
-        F.count_distinct("event_type").alias("r"),
-        F.count_distinct("dow").alias("c"),
-    )
-    # full grid (absent cells have o=0 but e>0 and still contribute)
-    grid = row_t.crossJoin(col_t).join(obs, ["event_type", "dow"], "left").fillna(
-        {"o": 0}
-    )
-    contrib = grid.crossJoin(F.broadcast(tot)).select(
-        F.round(
-            F.pow(
-                F.col("o").cast("double")
-                - F.col("rt").cast("double") * F.col("ct") / F.col("n"),
-                2,
-            )
-            / (F.col("rt").cast("double") * F.col("ct") / F.col("n")),
-            9,
-        ).alias("x"),
-        "n",
-        "r",
-        "c",
-    )
-    return contrib.groupBy("n", "r", "c").agg(
-        F.round(F.sum("x"), 6).alias("chi2")
-    ).select(
-        "chi2",
-        ((F.col("r") - 1) * (F.col("c") - 1)).cast("long").alias("dof"),
-        F.round(
-            F.sqrt(
-                F.col("chi2")
-                / (F.col("n") * F.least(F.col("r") - 1, F.col("c") - 1)).cast(
-                    "double"
-                )
-            ),
-            6,
-        ).alias("cramers_v"),
-        F.col("n").cast("long").alias("n"),
-    )
-
-
-def _chi2_independence_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT event_type,
-                   CAST(CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) % 7
-                        AS INT) AS dow
-            FROM events),
-        obs AS (
-            SELECT event_type, dow, COUNT(*) AS o FROM ev GROUP BY 1, 2),
-        row_t AS (SELECT event_type, SUM(o) AS rt FROM obs GROUP BY 1),
-        col_t AS (SELECT dow, SUM(o) AS ct FROM obs GROUP BY 1),
-        tot AS (
-            SELECT SUM(o) AS n, COUNT(DISTINCT event_type) AS r,
-                   COUNT(DISTINCT dow) AS c
-            FROM obs),
-        grid AS (
-            SELECT r.event_type, c.dow, r.rt, c.ct, COALESCE(o.o, 0) AS o
-            FROM row_t r CROSS JOIN col_t c
-            LEFT JOIN obs o ON o.event_type = r.event_type AND o.dow = c.dow),
-        contrib AS (
-            SELECT ROUND(POW(o - CAST(rt AS DOUBLE) * ct / t.n, 2)
-                         / (CAST(rt AS DOUBLE) * ct / t.n), 9) AS x,
-                   t.n, t.r, t.c
-            FROM grid CROSS JOIN tot t),
-        agg AS (
-            SELECT n, r, c, ROUND(SUM(x), 6) AS chi2
-            FROM contrib GROUP BY 1, 2, 3)
-        SELECT chi2,
-               CAST((r - 1) * (c - 1) AS BIGINT) AS dof,
-               ROUND(SQRT(chi2 / (n * LEAST(r - 1, c - 1))), 6) AS cramers_v,
-               CAST(n AS BIGINT) AS n
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# CUPED variance reduction, shingle containment join, clustering coefficient
-# ---------------------------------------------------------------------------
-
-_CUPED_SPLIT_DAY = 15
-
-
-def q_cuped_adjustment(spark, sf_dir):
-    """CUPED variance-reduced A/B read (Deng et al., WSDM 2013): users are
-    hashed into arms (md5 bucket parity — the hash_split convention, so
-    assignment is partition/order-independent), X = each user's
-    pre-period mean value (first 15 days), Y = post-period mean;
-    θ = cov(X,Y)/var(X) pooled, adjusted effect = (Ȳb−Ȳa) − θ(X̄b−X̄a),
-    and the variance reduction is corr(X,Y)² in closed form (no second
-    pass). Shape: one per-user agg shuffle, then O(1) scalar algebra —
-    the sums-then-ratio OLS protocol with 9-dp pre-rounding."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts", "value")
-    day = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86_400_000_000)
-    ).cast("long")
-    dmin = ev.agg(F.min(day).alias("d0"))
-    rel = ev.crossJoin(F.broadcast(dmin)).select(
-        "user_id", "value", (day - F.col("d0")).alias("d")
-    )
-    per_user = (
-        rel.groupBy("user_id")
-        .agg(
-            F.round(
-                F.avg(F.when(F.col("d") < _CUPED_SPLIT_DAY, F.col("value"))), 9
-            ).alias("x"),
-            F.round(
-                F.avg(F.when(F.col("d") >= _CUPED_SPLIT_DAY, F.col("value"))), 9
-            ).alias("y"),
-        )
-        .filter(F.col("x").isNotNull() & F.col("y").isNotNull())
-        .withColumn(
-            "arm",
-            (
-                F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-                .cast("long")
-                % 2
-            ).cast("int"),
-        )
-    )
-    s = lambda c: F.round(F.sum(c), 9)
-    g = per_user.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        s(F.col("x")).alias("sx"),
-        s(F.col("y")).alias("sy"),
-        s(F.col("x") * F.col("y")).alias("sxy"),
-        s(F.col("x") * F.col("x")).alias("sxx"),
-        s(F.col("y") * F.col("y")).alias("syy"),
-    )
-    arm = per_user.groupBy("arm").agg(
-        F.round(F.avg("x"), 9).alias("mx"), F.round(F.avg("y"), 9).alias("my")
-    )
-    a = arm.filter(F.col("arm") == 0).select(
-        F.col("mx").alias("mxa"), F.col("my").alias("mya")
-    )
-    b = arm.filter(F.col("arm") == 1).select(
-        F.col("mx").alias("mxb"), F.col("my").alias("myb")
-    )
-    cov = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    theta = F.round(cov / varx, 9)
-    return (
-        g.crossJoin(F.broadcast(a))
-        .crossJoin(F.broadcast(b))
-        .select(
-            F.col("n").cast("long").alias("n_users"),
-            F.round(theta, 6).alias("theta"),
-            F.round(F.col("myb") - F.col("mya"), 6).alias("diff_raw"),
-            F.round(
-                (F.col("myb") - F.col("mya"))
-                - theta * (F.col("mxb") - F.col("mxa")),
-                6,
-            ).alias("diff_adj"),
-            F.round(cov * cov / (varx * vary), 6).alias("var_red"),
-        )
-    )
-
-
-def _cuped_adjustment_sql() -> str:
-    return f"""
-        WITH ev AS (
-            SELECT user_id, value,
-                   CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS day
-            FROM events),
-        dmin AS (SELECT MIN(day) AS d0 FROM ev),
-        rel AS (
-            SELECT user_id, value, day - d0 AS d FROM ev CROSS JOIN dmin),
-        per_user AS (
-            SELECT user_id,
-                   ROUND(AVG(CASE WHEN d < {_CUPED_SPLIT_DAY} THEN value END),
-                         9) AS x,
-                   ROUND(AVG(CASE WHEN d >= {_CUPED_SPLIT_DAY} THEN value END),
-                         9) AS y,
-                   CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-                        ::BIGINT % 2 AS INT) AS arm
-            FROM rel GROUP BY user_id
-            HAVING x IS NOT NULL AND y IS NOT NULL),
-        g AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                   ROUND(SUM(x), 9) AS sx, ROUND(SUM(y), 9) AS sy,
-                   ROUND(SUM(x * y), 9) AS sxy,
-                   ROUND(SUM(x * x), 9) AS sxx,
-                   ROUND(SUM(y * y), 9) AS syy
-            FROM per_user),
-        arm AS (
-            SELECT arm, ROUND(AVG(x), 9) AS mx, ROUND(AVG(y), 9) AS my
-            FROM per_user GROUP BY 1),
-        a AS (SELECT mx AS mxa, my AS mya FROM arm WHERE arm = 0),
-        b AS (SELECT mx AS mxb, my AS myb FROM arm WHERE arm = 1)
-        SELECT CAST(n AS BIGINT) AS n_users,
-               ROUND(ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 9), 6)
-                   AS theta,
-               ROUND(myb - mya, 6) AS diff_raw,
-               ROUND((myb - mya)
-                     - ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 9)
-                       * (mxb - mxa), 6) AS diff_adj,
-               ROUND((n * sxy - sx * sy) * (n * sxy - sx * sy)
-                     / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-                   AS var_red
-        FROM g CROSS JOIN a CROSS JOIN b
-    """
-
-
-def q_containment_pairs(spark, sf_dir):
-    """Asymmetric shingle-containment join (quote/subset detection): ordered
-    doc pairs with |Sa ∩ Sb|/|Sa| >= 0.6 over word-3-gram sets, |Sa| >= 5 —
-    the near-dup signal Jaccard misses when a short doc is embedded in a
-    long one. One-sided prefix-filtered candidates (see
-    operators/dedup.py:set_containment_pairs for the exactness argument);
-    the DuckDB twin is the brute-force all-pairs filter."""
-    from raptor_service_spark.operators.dedup import (
-        distinct_shingle_rows,
-        set_containment_pairs,
-    )
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    dg = distinct_shingle_rows(docs, "text", "doc_id", 3)
-    return set_containment_pairs(dg, threshold=0.6, min_size=5)
-
-
-def _containment_pairs_sql() -> str:
-    from raptor_service_spark.operators.dedup import containment_pairs_sql
-
-    return containment_pairs_sql(
-        "documents", "text", "doc_id", 3, threshold=0.6, min_size=5
-    )
-
-
-def q_clustering_coeff(spark, sf_dir):
-    """Local clustering coefficient over the cell co-visitation graph
-    (res-3 cells, edge when >= 3 shared users): cc(v) = 2·t(v)/(d(v)·
-    (d(v)−1)) with t(v) from relational triangle enumeration — the
-    network-cohesion measure next to the global triangle count
-    (od_triangles) and k-core. Shape: triangles enumerate each a<b<c once
-    via two oriented-edge joins; the per-node explode is 3 rows per
-    triangle; degree is one agg over the symmetric edge list. Edge count
-    is covisit-thresholded, so fanout is graph-sized, never event-sized."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    basket = ev.select(
-        "user_id", cell_encode_col(lat, lng, 3).alias("cell")
-    ).dropDuplicates(["user_id", "cell"])
-    a = basket.select("user_id", F.col("cell").alias("u"))
-    b = basket.select("user_id", F.col("cell").alias("v"))
-    edges = (
-        a.join(b, "user_id")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("n_both"))
-        .filter(F.col("n_both") >= 3)
-        .select("u", "v")
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    e1 = edges.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    e2 = edges.select(F.col("u").alias("y"), F.col("v").alias("z"))
-    e3 = edges.select(F.col("u").alias("x"), F.col("v").alias("z"))
-    tri = (
-        e1.join(e2, "y")
-        .join(e3, ["x", "z"])
-        .select(F.explode(F.array("x", "y", "z")).alias("node"))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("tri"))
-    )
-    return (
-        deg.filter(F.col("deg") >= 2)
-        .join(tri, "node", "left")
-        .fillna({"tri": 0})
-        .select(
-            F.col("node").alias("cell"),
-            F.col("deg").cast("long").alias("deg"),
-            F.col("tri").cast("long").alias("tri"),
-            F.round(
-                2.0
-                * F.col("tri").cast("double")
-                / (F.col("deg") * (F.col("deg") - 1)).cast("double"),
-                6,
-            ).alias("cc"),
-        )
-    )
-
-
-def _clustering_coeff_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH basket AS (SELECT DISTINCT user_id, {cell} AS cell FROM events),
-        edges AS (
-            SELECT a.cell AS u, b.cell AS v
-            FROM basket a JOIN basket b
-              ON a.user_id = b.user_id AND a.cell < b.cell
-            GROUP BY 1, 2 HAVING COUNT(*) >= 3),
-        deg AS (
-            SELECT node, COUNT(*) AS deg FROM (
-                SELECT u AS node FROM edges
-                UNION ALL SELECT v FROM edges)
-            GROUP BY 1),
-        tri AS (
-            SELECT node, COUNT(*) AS tri FROM (
-                SELECT unnest([e1.u, e1.v, e2.v]) AS node
-                FROM edges e1
-                JOIN edges e2 ON e1.v = e2.u
-                JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v)
-            GROUP BY 1)
-        SELECT d.node AS cell,
-               CAST(d.deg AS BIGINT) AS deg,
-               CAST(COALESCE(t.tri, 0) AS BIGINT) AS tri,
-               ROUND(2.0 * COALESCE(t.tri, 0)
-                     / (d.deg * CAST(d.deg - 1 AS DOUBLE)), 6) AS cc
-        FROM deg d LEFT JOIN tri t ON d.node = t.node
-        WHERE d.deg >= 2
-    """
-
-
-# ---------------------------------------------------------------------------
-# HITS hub/authority, Rocchio pseudo-feedback, CDC chunk dedup
-# ---------------------------------------------------------------------------
-
-
-def q_hits_scores(spark, sf_dir):
-    """HITS hub/authority over the res-3 OD cell-transition graph (same
-    edge set as cell_pagerank, unweighted): authorities = tiles
-    trajectories flow INTO from many good hubs, hubs = tiles that feed
-    many good authorities — the two-sided centrality PageRank collapses
-    into one. 3 max-normalized iterations, 9-dp per-step rounding;
-    iteration mechanics in operators/cell_graph.py:hits."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.cell_graph import hits
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(
-            F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell"))
-        )
-        .select(F.col("prev_cell").alias("src"), F.col("cell").alias("dst"))
-    )
-    return hits(edges, n_iters=3)
-
-
-def _hits_scores_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import hits_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    edges = f"""
-        SELECT prev_cell AS src, cell AS dst
-        FROM (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id) AS prev_cell
-              FROM (SELECT user_id, ts, event_id, {cell} AS cell FROM events))
-        WHERE prev_cell IS NOT NULL AND prev_cell != cell
-    """
-    return hits_sql(edges, n_iters=3)
-
-
-_ROCCHIO_A, _ROCCHIO_B, _ROCCHIO_G = 1.0, 0.75, 0.15
-
-
-def q_rocchio_feedback(spark, sf_dir):
-    """Rocchio pseudo-relevance feedback in EMBEDDING space (the
-    vector-side twin of the term-side prf_expansion): stage-1 cosine
-    top-50 for QVEC, pseudo-relevant = ranks 1-10, pseudo-negative =
-    ranks 41-50; q' = α·q + β·centroid(rel) − γ·centroid(neg) with
-    per-dim centroids rounded to 6 dp (the kmeans/IVF literal-vector
-    protocol), then one re-scan re-ranks the corpus against the literal
-    q'. Scale shape: stage 1 is TakeOrderedAndProject; the centroid
-    arithmetic is O(50·dim) on the driver; stage 2 is the same codegen
-    scan as knn_top10 — never a dim-wise shuffle."""
-    e = _read(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    cand = (
-        e.withColumn("dist", F.round(cosine_dist_col(F.col("embedding"), QVEC), 9))
-        .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-        .limit(50)
-    )
-    # deterministic ranks: re-sort the 50 collected rows driver-side
-    rows = sorted(
-        cand.select("vec_id", "dist", "embedding").collect(),
-        key=lambda r: (r.dist, r.vec_id),
-    )
-    rel = np.mean([np.array(r.embedding, dtype=np.float64) for r in rows[:10]], axis=0)
-    neg = np.mean([np.array(r.embedding, dtype=np.float64) for r in rows[40:50]], axis=0)
-    qprime = _round_half_up(
-        _ROCCHIO_A * QVEC
-        + _ROCCHIO_B * _round_half_up(rel, 6)
-        - _ROCCHIO_G * _round_half_up(neg, 6),
-        6,
-    )
-    return (
-        e.withColumn("dist", F.round(cosine_dist_col(F.col("embedding"), qprime), 6))
-        .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id", "label", "dist")
-    )
-
-
-def _rocchio_feedback_sql() -> str:
-    demb = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
-    return f"""
-        WITH cand AS (
-            SELECT vec_id, {demb} AS v,
-                   ROUND(1.0 - list_cosine_similarity({demb}, {QVEC_SQL}), 9)
-                       AS dist
-            FROM embeddings
-            ORDER BY dist ASC, vec_id ASC LIMIT 50),
-        ranked AS (
-            SELECT v, ROW_NUMBER() OVER (ORDER BY dist ASC, vec_id ASC) AS rk
-            FROM cand),
-        relc AS (
-            SELECT i, ROUND(AVG(v[i]), 6) AS c
-            FROM ranked CROSS JOIN generate_series(1, 64) g(i)
-            WHERE rk <= 10 GROUP BY i),
-        negc AS (
-            SELECT i, ROUND(AVG(v[i]), 6) AS c
-            FROM ranked CROSS JOIN generate_series(1, 64) g(i)
-            WHERE rk >= 41 GROUP BY i),
-        qp AS (
-            SELECT list(ROUND({_ROCCHIO_A} * q.x + {_ROCCHIO_B} * r.c
-                              - {_ROCCHIO_G} * n.c, 6) ORDER BY r.i) AS qv
-            FROM relc r
-            JOIN negc n ON r.i = n.i
-            JOIN (SELECT i, ({QVEC_SQL})[i] AS x
-                  FROM generate_series(1, 64) g(i)) q
-              ON q.i = r.i)
-        SELECT e.vec_id, e.label,
-               ROUND(1.0 - list_cosine_similarity({demb}, qp.qv), 6) AS dist
-        FROM embeddings e CROSS JOIN qp
-        ORDER BY dist ASC, vec_id ASC LIMIT 10
-    """
 
 
 _CDC_W = 16  # rolling window (chars) hashed at each position
@@ -13838,755 +3513,8 @@ def _cdc_chunks_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# round-3 batch: graph structure (assortativity, modularity, link prediction),
-# corpus statistics (JSD, Kneser-Ney), geometry (shoelace), sketches (HLL)
+# naive-Bayes language classifier
 # ---------------------------------------------------------------------------
-
-
-def _od_cell_edges(spark, sf_dir, res: int = 3) -> DataFrame:
-    """Directed res-`res` OD cell-transition edges with counts — the shared
-    edge construction of cell_pagerank / hits_scores / cell_markov."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, res))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell")))
-        .groupBy(F.col("prev_cell").alias("src"), F.col("cell").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def _od_cell_edges_sql(res: int = 3) -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, res)
-    return f"""
-        SELECT prev_cell AS src, cell AS dst, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id) AS prev_cell
-              FROM (SELECT user_id, ts, event_id, {cell} AS cell FROM events))
-        WHERE prev_cell IS NOT NULL AND prev_cell != cell
-        GROUP BY 1, 2
-    """
-
-
-def _undirected_cell_edges(spark, sf_dir, res: int = 3) -> DataFrame:
-    """Undirected collapse of the OD graph: (a<b, w = both-direction count)."""
-    e = _od_cell_edges(spark, sf_dir, res)
-    return (
-        e.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            "cnt",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("cnt").alias("w"))
-    )
-
-
-def _undirected_cell_edges_sql(res: int = 3) -> str:
-    return f"""
-        SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b,
-               CAST(SUM(cnt) AS BIGINT) AS w
-        FROM ({_od_cell_edges_sql(res)}) GROUP BY 1, 2
-    """
-
-
-def q_degree_assortativity(spark, sf_dir):
-    """Degree assortativity coefficient (Newman 2002) of the undirected
-    res-3 OD cell graph: Pearson correlation of the degrees at the two ends
-    of every edge (both orientations) — do hubs connect to hubs (r>0,
-    social-network shape) or to leaves (r<0, infrastructure shape)?
-    Everything is exact integer sums (degrees, cross products) until the
-    single final division, so the float is bit-identical across engines.
-    Scale shape: one edge agg + two broadcast-size joins of the O(cells)
-    degree table; no quadratic anywhere."""
-    e = _undirected_cell_edges(spark, sf_dir).select("a", "b")
-    deg = (
-        e.select(F.col("a").alias("v"))
-        .unionByName(e.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    ends = (
-        e.join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "dx"), "a")
-        .join(deg.withColumnRenamed("v", "b").withColumnRenamed("deg", "dy"), "b")
-        .select("dx", "dy")
-    )
-    both = ends.unionByName(ends.select(F.col("dy").alias("dx"), F.col("dx").alias("dy")))
-    s = both.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dx").alias("sx"),
-        F.sum(F.col("dx") * F.col("dx")).alias("sxx"),
-        F.sum(F.col("dx") * F.col("dy")).alias("sxy"),
-    )
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sx")
-    den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    return s.select(
-        (F.col("n") / F.lit(2)).cast("long").alias("m_edges"),
-        # zero degree variance (e.g. the res-3 OD graph saturates to a
-        # near-complete graph at sf >= 0.1) makes r undefined -> NULL in
-        # BOTH engines (was an ANSI DIVIDE_BY_ZERO at sf0.1, caught by the
-        # strict bench sweep)
-        F.round(F.when(den != 0, num / den), 6).alias("assortativity"),
-    )
-
-
-def _degree_assortativity_sql() -> str:
-    return f"""
-        WITH e AS (SELECT a, b FROM ({_undirected_cell_edges_sql()})),
-        deg AS (
-            SELECT v, CAST(COUNT(*) AS BIGINT) AS deg
-            FROM (SELECT a AS v FROM e UNION ALL SELECT b FROM e) GROUP BY v),
-        ends AS (
-            SELECT da.deg AS dx, db.deg AS dy
-            FROM e JOIN deg da ON e.a = da.v JOIN deg db ON e.b = db.v),
-        bth AS (SELECT dx, dy FROM ends UNION ALL SELECT dy, dx FROM ends),
-        s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(dx) AS sx,
-                     SUM(dx * dx) AS sxx, SUM(dx * dy) AS sxy FROM bth)
-        SELECT CAST(n / 2 AS BIGINT) AS m_edges,
-               CASE WHEN n * sxx - sx * sx = 0 THEN NULL
-                    ELSE ROUND(CAST(n * sxy - sx * sx AS DOUBLE)
-                               / CAST(n * sxx - sx * sx AS DOUBLE), 6)
-               END AS assortativity
-        FROM s
-    """
-
-
-def q_cell_modularity(spark, sf_dir):
-    """Newman modularity of the res-1 parent-tile partition of the weighted
-    res-3 OD graph — do trajectories stay inside coarse regions (Q near 1)
-    or cross them freely (Q near 0)? Q = Σ_c [W_in(c)/W − (d_c/2W)²] over
-    communities c = the 16 res-1 ancestors; every term is an exact integer
-    sum (weights are transition counts) so the float division is
-    bit-identical across engines. One edge agg + O(cells) degree agg."""
-    from raptor_service_spark.geo.grid import cell_parent_col
-
-    e = _undirected_cell_edges(spark, sf_dir)
-    e = e.withColumn("ca", cell_parent_col(F.col("a"), 3, 1)).withColumn(
-        "cb", cell_parent_col(F.col("b"), 3, 1)
-    )
-    tot = e.agg(F.sum("w").alias("w_tot"))
-    w_in = (
-        e.filter(F.col("ca") == F.col("cb"))
-        .groupBy(F.col("ca").alias("c"))
-        .agg(F.sum("w").alias("w_in"))
-    )
-    d_c = (
-        e.select(F.col("ca").alias("c"), F.col("w"))
-        .unionByName(e.select(F.col("cb").alias("c"), F.col("w")))
-        .groupBy("c")
-        .agg(F.sum("w").alias("d_c"))
-    )
-    per = (
-        d_c.join(w_in, "c", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.coalesce("w_in", F.lit(0)).cast("double").alias("wi"),
-            F.col("d_c").cast("double").alias("dc"),
-            F.col("w_tot").cast("double").alias("wt"),
-        )
-    )
-    return per.agg(
-        F.count(F.lit(1)).alias("n_communities"),
-        F.max(F.col("wt").cast("long")).alias("w_total"),
-        F.round(
-            F.sum(
-                F.col("wi") / F.col("wt")
-                - (F.col("dc") / (F.lit(2.0) * F.col("wt")))
-                * (F.col("dc") / (F.lit(2.0) * F.col("wt")))
-            ),
-            6,
-        ).alias("q_modularity"),
-    )
-
-
-def _cell_modularity_sql() -> str:
-    ca = cell_parent_sql("a", 3, 1)
-    cb = cell_parent_sql("b", 3, 1)
-    return f"""
-        WITH e AS (SELECT a, b, w, {ca} AS ca, {cb} AS cb
-                   FROM ({_undirected_cell_edges_sql()})),
-        tot AS (SELECT CAST(SUM(w) AS BIGINT) AS w_tot FROM e),
-        w_in AS (SELECT ca AS c, CAST(SUM(w) AS BIGINT) AS w_in FROM e
-                 WHERE ca = cb GROUP BY 1),
-        d_c AS (SELECT c, CAST(SUM(w) AS BIGINT) AS d_c
-                FROM (SELECT ca AS c, w FROM e UNION ALL SELECT cb, w FROM e)
-                GROUP BY c),
-        per AS (SELECT CAST(COALESCE(w.w_in, 0) AS DOUBLE) AS wi,
-                       CAST(d.d_c AS DOUBLE) AS dc,
-                       CAST(t.w_tot AS DOUBLE) AS wt
-                FROM d_c d LEFT JOIN w_in w ON d.c = w.c CROSS JOIN tot t)
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
-               CAST(MAX(wt) AS BIGINT) AS w_total,
-               ROUND(SUM(wi / wt - (dc / (2.0 * wt)) * (dc / (2.0 * wt))), 6)
-                   AS q_modularity
-        FROM per
-    """
-
-
-def q_link_prediction(spark, sf_dir):
-    """Link prediction over the undirected res-3 OD graph: for every
-    NON-adjacent cell pair with ≥1 common neighbor, the three classic
-    scores — common-neighbor count, Jaccard of neighborhoods, Adamic-Adar
-    Σ 1/ln(deg(z)) (z ranges over shared neighbors; deg(z) ≥ 2 whenever z
-    is shared, so the log is positive). Top-20 by (AA desc, a, b). Scale
-    shape: candidates come from ONE 2-hop equi-join through the shared
-    neighbor (bounded by Σ deg², the standard triangle-count budget), the
-    existing-edge filter is an anti-join, and per-z AA terms are pre-rounded
-    to 9 dp before the SUM (cross-engine float discipline)."""
-    e = _undirected_cell_edges(spark, sf_dir).select("a", "b")
-    nbr = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = nbr.groupBy(F.col("a").alias("v")).agg(F.count(F.lit(1)).alias("deg"))
-    hop2 = (
-        nbr.withColumnRenamed("a", "x").withColumnRenamed("b", "z")
-        .join(
-            nbr.select(F.col("a").alias("z"), F.col("b").alias("y")),
-            "z",
-        )
-        .filter(F.col("x") < F.col("y"))
-        .join(
-            e.select(F.col("a").alias("x"), F.col("b").alias("y")),
-            ["x", "y"],
-            "left_anti",
-        )
-    )
-    scored = (
-        hop2.join(deg.withColumnRenamed("v", "z"), "z")
-        .withColumn("aa_term", F.round(F.lit(1.0) / F.log(F.col("deg").cast("double")), 9))
-        .groupBy(F.col("x").alias("a"), F.col("y").alias("b"))
-        .agg(F.count(F.lit(1)).alias("cn"), F.round(F.sum("aa_term"), 6).alias("aa"))
-    )
-    out = (
-        scored.join(deg.select(F.col("v").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("v").alias("b"), F.col("deg").alias("db")), "b")
-        .select(
-            "a",
-            "b",
-            "cn",
-            F.round(
-                F.col("cn") / (F.col("da") + F.col("db") - F.col("cn")), 6
-            ).alias("jaccard"),
-            "aa",
-        )
-    )
-    return out.orderBy(F.col("aa").desc(), "a", "b").limit(20)
-
-
-def _link_prediction_sql() -> str:
-    return f"""
-        WITH e AS (SELECT a, b FROM ({_undirected_cell_edges_sql()})),
-        nbr AS (SELECT a, b FROM e UNION ALL SELECT b, a FROM e),
-        deg AS (SELECT a AS v, CAST(COUNT(*) AS BIGINT) AS deg
-                FROM nbr GROUP BY 1),
-        hop2 AS (
-            SELECT n1.a AS x, n1.b AS z, n2.b AS y
-            FROM nbr n1 JOIN nbr n2 ON n1.b = n2.a
-            WHERE n1.a < n2.b
-              AND NOT EXISTS (SELECT 1 FROM e
-                              WHERE e.a = n1.a AND e.b = n2.b)),
-        scored AS (
-            SELECT x AS a, y AS b, CAST(COUNT(*) AS BIGINT) AS cn,
-                   ROUND(SUM(ROUND(1.0 / LN(CAST(d.deg AS DOUBLE)), 9)), 6)
-                       AS aa
-            FROM hop2 JOIN deg d ON hop2.z = d.v
-            GROUP BY 1, 2)
-        SELECT s.a, s.b, s.cn,
-               ROUND(CAST(s.cn AS DOUBLE) / (da.deg + db.deg - s.cn), 6)
-                   AS jaccard,
-               s.aa
-        FROM scored s JOIN deg da ON s.a = da.v JOIN deg db ON s.b = db.v
-        ORDER BY aa DESC, a, b LIMIT 20
-    """
-
-
-_JSD_SOURCES = ["src0", "src1", "src2", "src3", "src4"]
-
-
-def q_jsd_sources(spark, sf_dir):
-    """Pairwise Jensen-Shannon divergence (nats) between the term
-    distributions of five corpus sources — the drift/contrast matrix a
-    data-mixing pipeline keeps per shard (symmetric, bounded by ln 2,
-    defined even with disjoint support — the failure modes of plain KL).
-    Dense (source × term) grid via cross join of the O(vocab) term list
-    (vocab-sized, broadcastable), per-term contributions pre-rounded to
-    9 dp before the pair SUM. One token scan feeds everything."""
-    from raptor_service_spark.operators.dedup import words_col
-
-    d = _read(spark, sf_dir, "documents").filter(F.col("source").isin(_JSD_SOURCES))
-    toks = d.select("source", F.explode(words_col(F.col("text"))).alias("term"))
-    cnt = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("c"))
-    tot = cnt.groupBy("source").agg(F.sum("c").alias("n"))
-    vocab = cnt.select("term").distinct()
-    srcs = tot.select("source", "n")
-    dense = (
-        vocab.crossJoin(F.broadcast(srcs))
-        .join(cnt, ["source", "term"], "left")
-        .select(
-            "source",
-            "term",
-            (F.coalesce("c", F.lit(0)).cast("double") / F.col("n")).alias("p"),
-        )
-    )
-    pairs = (
-        dense.withColumnRenamed("source", "src_a").withColumnRenamed("p", "pa")
-        .join(
-            dense.withColumnRenamed("source", "src_b").withColumnRenamed("p", "pb"),
-            "term",
-        )
-        .filter(F.col("src_a") < F.col("src_b"))
-    )
-    term_c = F.round(
-        F.when(
-            F.col("pa") > 0,
-            F.lit(0.5) * F.col("pa") * F.log(F.lit(2.0) * F.col("pa") / (F.col("pa") + F.col("pb"))),
-        ).otherwise(F.lit(0.0))
-        + F.when(
-            F.col("pb") > 0,
-            F.lit(0.5) * F.col("pb") * F.log(F.lit(2.0) * F.col("pb") / (F.col("pa") + F.col("pb"))),
-        ).otherwise(F.lit(0.0)),
-        9,
-    )
-    return (
-        pairs.withColumn("t", term_c)
-        .groupBy("src_a", "src_b")
-        .agg(F.round(F.sum("t"), 6).alias("jsd"))
-        .orderBy("src_a", "src_b")
-    )
-
-
-def _jsd_sources_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    srcs = ", ".join(f"'{s}'" for s in _JSD_SOURCES)
-    return f"""
-        WITH toks AS (
-            SELECT source, unnest({words_sql("text")}) AS term
-            FROM documents WHERE source IN ({srcs})),
-        cnt AS (SELECT source, term, CAST(COUNT(*) AS BIGINT) AS c
-                FROM toks GROUP BY 1, 2),
-        tot AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n FROM cnt GROUP BY 1),
-        vocab AS (SELECT DISTINCT term FROM cnt),
-        dense AS (
-            SELECT t.source, v.term,
-                   CAST(COALESCE(c.c, 0) AS DOUBLE) / t.n AS p
-            FROM vocab v CROSS JOIN tot t
-            LEFT JOIN cnt c ON c.source = t.source AND c.term = v.term),
-        pairs AS (
-            SELECT da.source AS src_a, db.source AS src_b,
-                   da.p AS pa, db.p AS pb
-            FROM dense da JOIN dense db ON da.term = db.term
-            WHERE da.source < db.source)
-        SELECT src_a, src_b,
-               ROUND(SUM(ROUND(
-                   CASE WHEN pa > 0
-                        THEN 0.5 * pa * LN(2.0 * pa / (pa + pb)) ELSE 0 END
-                 + CASE WHEN pb > 0
-                        THEN 0.5 * pb * LN(2.0 * pb / (pa + pb)) ELSE 0 END,
-               9)), 6) AS jsd
-        FROM pairs GROUP BY 1, 2 ORDER BY 1, 2
-    """
-
-
-def q_polygon_metrics(spark, sf_dir):
-    """Shoelace geometry over the polygon TABLE (the pip_polygon_table
-    fixtures): signed-area → area, perimeter, and the area-weighted
-    centroid of every polygon, computed ARRAY-side (aggregate over the
-    vertex array with wraparound indexing — one row per polygon end to
-    end, no explode, no UDF). x = lng, y = lat, planar degree space (the
-    repo's polygon convention). The vertex floats are one shared Python
-    literal source for both engines, so results are bit-identical."""
-    pt = spark.createDataFrame(
-        [(f"q{k}", poly) for k, poly in enumerate(_pipt_polys())],
-        "qid string, verts array<array<double>>",
-    )
-    n = F.size("verts")
-    # cross_i = x_i * y_j - x_j * y_i with j = (i + 1) mod n; verts are
-    # [lat, lng] pairs -> x = v[1], y = v[0]
-    cross_i = (
-        "transform(sequence(0, size(verts) - 1), i -> "
-        "verts[i][1] * verts[(i + 1) % size(verts)][0] "
-        "- verts[(i + 1) % size(verts)][1] * verts[i][0])"
-    )
-    seg_len = (
-        "transform(sequence(0, size(verts) - 1), i -> "
-        "sqrt((verts[(i + 1) % size(verts)][1] - verts[i][1]) "
-        "   * (verts[(i + 1) % size(verts)][1] - verts[i][1]) "
-        "   + (verts[(i + 1) % size(verts)][0] - verts[i][0]) "
-        "   * (verts[(i + 1) % size(verts)][0] - verts[i][0])))"
-    )
-    cx_terms = (
-        "transform(sequence(0, size(verts) - 1), i -> "
-        "(verts[i][1] + verts[(i + 1) % size(verts)][1]) * "
-        "(verts[i][1] * verts[(i + 1) % size(verts)][0] "
-        " - verts[(i + 1) % size(verts)][1] * verts[i][0]))"
-    )
-    cy_terms = (
-        "transform(sequence(0, size(verts) - 1), i -> "
-        "(verts[i][0] + verts[(i + 1) % size(verts)][0]) * "
-        "(verts[i][1] * verts[(i + 1) % size(verts)][0] "
-        " - verts[(i + 1) % size(verts)][1] * verts[i][0]))"
-    )
-    ssum = "aggregate({0}, cast(0.0 as double), (acc, t) -> acc + t)"
-    s = F.expr(ssum.format(cross_i))
-    return pt.select(
-        "qid",
-        n.cast("long").alias("n_verts"),
-        F.round(F.abs(s) / 2.0, 6).alias("area"),
-        F.round(F.expr(ssum.format(seg_len)), 6).alias("perimeter"),
-        F.round(F.expr(ssum.format(cx_terms)) / (F.lit(3.0) * s), 6).alias("centroid_lng"),
-        F.round(F.expr(ssum.format(cy_terms)) / (F.lit(3.0) * s), 6).alias("centroid_lat"),
-    ).orderBy("qid")
-
-
-def _polygon_metrics_sql() -> str:
-    rows = []
-    for k, poly in enumerate(_pipt_polys()):
-        verts = ", ".join(f"[{a!r}, {b!r}]" for a, b in poly)
-        rows.append(f"('q{k}', [{verts}])")
-    vals = ",\n               ".join(rows)
-    j = "((i % len(verts)) + 1)"  # 1-based wraparound successor of 1-based i
-    cross_i = (
-        f"list_transform(generate_series(1, len(verts)), i -> "
-        f"verts[i][2] * verts[{j}][1] - verts[{j}][2] * verts[i][1])"
-    )
-    seg_len = (
-        f"list_transform(generate_series(1, len(verts)), i -> "
-        f"sqrt((verts[{j}][2] - verts[i][2]) * (verts[{j}][2] - verts[i][2]) "
-        f"   + (verts[{j}][1] - verts[i][1]) * (verts[{j}][1] - verts[i][1])))"
-    )
-    cx_terms = (
-        f"list_transform(generate_series(1, len(verts)), i -> "
-        f"(verts[i][2] + verts[{j}][2]) * "
-        f"(verts[i][2] * verts[{j}][1] - verts[{j}][2] * verts[i][1]))"
-    )
-    cy_terms = (
-        f"list_transform(generate_series(1, len(verts)), i -> "
-        f"(verts[i][1] + verts[{j}][1]) * "
-        f"(verts[i][2] * verts[{j}][1] - verts[{j}][2] * verts[i][1]))"
-    )
-    red = "list_aggregate({0}, 'sum')"
-    return f"""
-        WITH pt0(qid, verts) AS (VALUES
-               {vals}),
-        pt AS (SELECT qid, CAST(verts AS DOUBLE[][]) AS verts FROM pt0),
-        m AS (SELECT qid, len(verts) AS n_verts,
-                     {red.format(cross_i)} AS s,
-                     {red.format(seg_len)} AS per,
-                     {red.format(cx_terms)} AS cxs,
-                     {red.format(cy_terms)} AS cys
-              FROM pt)
-        SELECT qid, CAST(n_verts AS BIGINT) AS n_verts,
-               ROUND(ABS(s) / 2.0, 6) AS area,
-               ROUND(per, 6) AS perimeter,
-               ROUND(cxs / (3.0 * s), 6) AS centroid_lng,
-               ROUND(cys / (3.0 * s), 6) AS centroid_lat
-        FROM m ORDER BY qid
-    """
-
-
-_KN_D = 0.75
-_KN_MIN_C = 30
-
-
-def q_kn_bigram_lm(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram probabilities — the n-gram smoothing
-    the pre-neural LM era standardized on (and the one BPE-era data work
-    still uses for contamination/perplexity screens): P(w2|w1) =
-    max(c12−d,0)/c1 + d·N1+(w1·)/c1 · N1+(·w2)/|bigram types|, d=0.75.
-    The continuation counts (type counts, not token counts) are what
-    distinguish KN from the add-k smoothing in doc_bigram_ppl. Everything
-    is joins of AGGREGATED count tables (bigram counts, left/right type
-    marginals) — one token scan, vocab-bounded intermediates. Top-20 by
-    probability among bigrams seen ≥ 30 times."""
-    from raptor_service_spark.operators.dedup import words_col
-
-    d = _read(spark, sf_dir, "documents")
-    toks = d.select("doc_id", words_col(F.col("text")).alias("ws"))
-    bi = toks.filter(F.size("ws") >= 2).select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(ws) - 1), "
-                "i -> named_struct('w1', ws[i - 1], 'w2', ws[i]))"
-            )
-        ).alias("b")
-    ).select("b.w1", "b.w2")
-    c12 = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    c1 = c12.groupBy("w1").agg(
-        F.sum("c12").alias("c1"), F.count(F.lit(1)).alias("n1p_fwd")
-    )
-    cont = c12.groupBy("w2").agg(F.count(F.lit(1)).alias("n1p_rev"))
-    n_types = c12.agg(F.count(F.lit(1)).alias("n_bi_types"))
-    out = (
-        c12.filter(F.col("c12") >= _KN_MIN_C)
-        .join(c1, "w1")
-        .join(cont, "w2")
-        .crossJoin(F.broadcast(n_types))
-        .select(
-            "w1",
-            "w2",
-            "c12",
-            F.round(
-                F.greatest(F.col("c12") - F.lit(_KN_D), F.lit(0.0)) / F.col("c1")
-                + F.lit(_KN_D)
-                * F.col("n1p_fwd")
-                / F.col("c1")
-                * (F.col("n1p_rev") / F.col("n_bi_types")),
-                6,
-            ).alias("p_kn"),
-        )
-    )
-    return out.orderBy(F.col("p_kn").desc(), "w1", "w2").limit(20)
-
-
-def _kn_bigram_lm_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    return f"""
-        WITH toks AS (SELECT doc_id, {w} AS ws FROM documents),
-        bi AS (
-            SELECT b.w1, b.w2 FROM (
-                SELECT unnest(list_transform(generate_series(1, len(ws) - 1),
-                       i -> struct_pack(w1 := ws[i], w2 := ws[i + 1]))) AS b
-                FROM toks WHERE len(ws) >= 2)),
-        c12 AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c12
-                FROM bi GROUP BY 1, 2),
-        c1 AS (SELECT w1, CAST(SUM(c12) AS BIGINT) AS c1,
-                      CAST(COUNT(*) AS BIGINT) AS n1p_fwd
-               FROM c12 GROUP BY 1),
-        cont AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1p_rev
-                 FROM c12 GROUP BY 1),
-        nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_bi_types FROM c12)
-        SELECT b.w1, b.w2, b.c12,
-               ROUND(GREATEST(b.c12 - {_KN_D}, 0.0) / c1.c1
-                     + {_KN_D} * c1.n1p_fwd / c1.c1
-                       * (CAST(cont.n1p_rev AS DOUBLE) / nt.n_bi_types), 6)
-                   AS p_kn
-        FROM c12 b JOIN c1 ON b.w1 = c1.w1 JOIN cont ON b.w2 = cont.w2
-        CROSS JOIN nt
-        WHERE b.c12 >= {_KN_MIN_C}
-        ORDER BY p_kn DESC, b.w1, b.w2 LIMIT 20
-    """
-
-
-_HLL_P = 8  # 2^8 = 256 registers
-_HLL_ALPHA = 0.7213 / (1.0 + 1.079 / 256.0)
-
-
-def q_hll_distinct(spark, sf_dir):
-    """HyperLogLog distinct-count of event ids with 256 registers, next to
-    the exact answer — the constant-memory mergeable sketch every
-    distributed engine ships (vs the KMV sketch in kmv_distinct). Register
-    j = h mod 256, rank = trailing-zero count of h>>8 plus 1 (bit_count on
-    the isolated lowest set bit — identical integer ops both engines, md5
-    the shared hash); estimator = α·m²/Σ2^-M with the linear-counting
-    small-range branch. ONE partial+final agg to 256 rows, then scalar
-    math; merging register maxes is exactly how this runs at 1000
-    executors."""
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    h = F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10).cast(
-        "long"
-    )
-    # h DIV 256 must stay in INTEGER arithmetic: a double division would
-    # lose bits of the 60-bit hash past 2^53 (DuckDB's // is exact)
-    hashed = ev.select(h.alias("h")).selectExpr("h % 256 AS j", "h DIV 256 AS w")
-    regs = (
-        hashed.withColumn(
-            "rho",
-            F.when(F.col("w") == 0, F.lit(53)).otherwise(
-                F.expr("bit_count((w & -w) - 1) + 1")
-            ),
-        )
-        .groupBy("j")
-        .agg(F.max("rho").alias("m"))
-    )
-    sums = regs.agg(
-        F.count(F.lit(1)).alias("occ"),
-        F.sum(F.round(F.pow(F.lit(2.0), -F.col("m")), 9)).alias("s_occ"),
-    )
-    exact = ev.agg(F.count_distinct("event_id").alias("n_exact"))
-    est_raw = F.lit(_HLL_ALPHA) * F.lit(256.0 * 256.0) / (
-        F.lit(256.0) - F.col("occ") + F.col("s_occ")
-    )
-    v = F.lit(256) - F.col("occ")
-    est = F.when(
-        (est_raw <= F.lit(2.5 * 256.0)) & (v > 0),
-        F.lit(256.0) * F.log(F.lit(256.0) / v.cast("double")),
-    ).otherwise(est_raw)
-    return (
-        sums.crossJoin(F.broadcast(exact))
-        .select(
-            "n_exact",
-            v.cast("long").alias("zero_regs"),
-            F.round(est, 3).alias("hll_est"),
-            F.round(F.abs(est - F.col("n_exact")) / F.col("n_exact"), 6).alias(
-                "rel_err"
-            ),
-        )
-    )
-
-
-def _hll_distinct_sql() -> str:
-    return f"""
-        WITH h AS (
-            SELECT ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT
-                       AS hv
-            FROM events),
-        parts AS (SELECT hv % 256 AS j, hv // 256 AS w FROM h),
-        regs AS (
-            SELECT j, MAX(CASE WHEN w = 0 THEN 53
-                               ELSE bit_count((w & -w) - 1) + 1 END) AS m
-            FROM parts GROUP BY j),
-        sums AS (SELECT CAST(COUNT(*) AS BIGINT) AS occ,
-                        SUM(ROUND(POWER(2.0, -m), 9)) AS s_occ
-                 FROM regs),
-        exact AS (SELECT CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_exact
-                  FROM events),
-        est AS (
-            SELECT n_exact, 256 - occ AS zero_regs,
-                   CAST({_HLL_ALPHA!r} AS DOUBLE) * 65536.0
-                       / (256.0 - occ + s_occ) AS raw
-            FROM sums CROSS JOIN exact)
-        SELECT n_exact, CAST(zero_regs AS BIGINT) AS zero_regs,
-               ROUND(CASE WHEN raw <= 640.0 AND zero_regs > 0
-                          THEN 256.0 * LN(256.0 / zero_regs)
-                          ELSE raw END, 3) AS hll_est,
-               ROUND(ABS(CASE WHEN raw <= 640.0 AND zero_regs > 0
-                              THEN 256.0 * LN(256.0 / zero_regs)
-                              ELSE raw END - n_exact) / n_exact, 6) AS rel_err
-        FROM est
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 2: TextRank, personalized PageRank, LPA communities,
-# NB language classifier, k-means silhouette, SymSpell lookup, logistic GD
-# ---------------------------------------------------------------------------
-
-
-def q_textrank_keywords(spark, sf_dir):
-    """TextRank keyword extraction (Mihalcea & Tarau 2004): PageRank over
-    the word co-occurrence graph (adjacent-token pairs, both directions,
-    weight = count) — unsupervised keyword salience that, unlike TF-IDF,
-    rewards terms central to the corpus graph rather than merely frequent.
-    Reuses the oracle-green pagerank iteration core (4 damped rounds, 9-dp
-    per-round rounding); the graph is vocab-bounded so every iteration is
-    O(vocab + vocab-pairs). Top-20 terms."""
-    from raptor_service_spark.operators.cell_graph import pagerank
-    from raptor_service_spark.operators.dedup import words_col
-
-    d = _read(spark, sf_dir, "documents")
-    toks = d.select(words_col(F.col("text")).alias("ws")).filter(F.size("ws") >= 2)
-    bi = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(ws) - 1), "
-                "i -> named_struct('w1', ws[i - 1], 'w2', ws[i]))"
-            )
-        ).alias("b")
-    ).select("b.w1", "b.w2")
-    edges = (
-        bi.unionByName(bi.select(F.col("w2").alias("w1"), F.col("w1").alias("w2")))
-        .groupBy(F.col("w1").alias("src"), F.col("w2").alias("dst"))
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-    )
-    pr = pagerank(edges, n_iters=4, damping=0.85)
-    return (
-        pr.select(F.col("cell").alias("term"), "pr")
-        .orderBy(F.col("pr").desc(), "term")
-        .limit(20)
-    )
-
-
-def _textrank_keywords_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import pagerank_sql
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    edges = f"""
-        SELECT w1 AS src, w2 AS dst, CAST(COUNT(*) AS DOUBLE) AS w
-        FROM (SELECT b.w1, b.w2 FROM (
-                SELECT unnest(list_transform(generate_series(1, len(ws) - 1),
-                       i -> struct_pack(w1 := ws[i], w2 := ws[i + 1]))) AS b
-                FROM (SELECT {w} AS ws FROM documents) WHERE len(ws) >= 2)
-              UNION ALL
-              SELECT b.w2, b.w1 FROM (
-                SELECT unnest(list_transform(generate_series(1, len(ws) - 1),
-                       i -> struct_pack(w1 := ws[i], w2 := ws[i + 1]))) AS b
-                FROM (SELECT {w} AS ws FROM documents) WHERE len(ws) >= 2))
-        GROUP BY 1, 2
-    """
-    inner = pagerank_sql(edges, n_iters=4, damping=0.85)
-    return f"""
-        SELECT cell AS term, pr FROM ({inner})
-        ORDER BY pr DESC, term LIMIT 20
-    """
-
-
-def q_ppr_scores(spark, sf_dir):
-    """Personalized PageRank from the most-visited res-3 cell (random walk
-    with restart): reachability-biased centrality — "where do trajectories
-    that pass through the hub END UP". Seed = argmax total in-degree (tie:
-    smaller cell id), computed from the same edge agg that feeds the walk
-    (O(1) driver rows); 5 damped rounds, 9-dp per-round rounding. Top-20
-    cells by score."""
-    from raptor_service_spark.operators.cell_graph import ppr
-
-    edges = _od_cell_edges(spark, sf_dir).withColumn(
-        "w", F.col("cnt").cast("double")
-    )
-    seed = (
-        edges.groupBy("dst")
-        .agg(F.sum("cnt").alias("deg"))
-        .orderBy(F.col("deg").desc(), F.col("dst").asc())
-        .limit(1)
-        .collect()[0]["dst"]
-    )
-    return (
-        ppr(edges, seed=seed, n_iters=5, damping=0.85)
-        .orderBy(F.col("pr").desc(), "cell")
-        .limit(20)
-    )
-
-
-def _ppr_scores_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import ppr_sql
-
-    seed = (
-        "(SELECT dst FROM e GROUP BY dst "
-        "ORDER BY SUM(cnt) DESC, dst ASC LIMIT 1)"
-    )
-    edges = f"SELECT src, dst, cnt, CAST(cnt AS DOUBLE) AS w FROM ({_od_cell_edges_sql()})"
-    inner = ppr_sql(edges, seed=seed, n_iters=5, damping=0.85)
-    return f"SELECT cell, pr FROM ({inner}) ORDER BY pr DESC, cell LIMIT 20"
-
-
-def q_lpa_communities(spark, sf_dir):
-    """Label-propagation communities over the undirected res-3 OD graph —
-    the near-linear community detector (Raghavan 2007), deterministic
-    variant: most-frequent neighbor label, ties to the smallest label, 4
-    synchronous rounds (the randomized original can never be
-    oracle-checked). Output (cell, label, n_members)."""
-    from raptor_service_spark.operators.cell_graph import lpa
-
-    e = _undirected_cell_edges(spark, sf_dir)
-    return lpa(e, n_iters=4, src="a", dst="b").orderBy("cell")
-
-
-def _lpa_communities_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import lpa_sql
-
-    edges = f"SELECT a AS src, b AS dst FROM ({_undirected_cell_edges_sql()})"
-    return f"SELECT * FROM ({lpa_sql(edges, n_iters=4)}) ORDER BY cell"
-
-
-_NB_LANGS = ["de", "en", "es", "fr", "zh"]
 
 
 def q_nb_langid(spark, sf_dir):
@@ -14692,399 +3620,9 @@ def _nb_langid_sql() -> str:
     """
 
 
-def q_silhouette_kmeans(spark, sf_dir):
-    """Simplified silhouette of the kmeans_geo model (k=8, 4 Lloyd
-    rounds): per point a = distance to its own centroid, b = distance to
-    the nearest OTHER centroid, s = (b−a)/max(a,b) — the standard cluster-
-    quality audit, centroid-simplified so it is O(n·k) instead of O(n²).
-    Points are scored against the FINAL centroids (one extra assignment
-    pass). The k centroids are O(k) driver literals (the kmeans_geo
-    protocol); scoring is a flat codegen projection + one agg. Per-point s
-    pre-rounds to 9 dp; per-cluster mean to 6."""
-    from raptor_service_spark.operators.clustering import kmeans_centroids
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(F.col("doc_id").alias("id"), lng.alias("x"), lat.alias("y"))
-    cents = kmeans_centroids(pts, k=8, n_iters=4)
-    pairs = F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    (
-                        (F.col("x") - F.lit(cx)) * (F.col("x") - F.lit(cx))
-                        + (F.col("y") - F.lit(cy)) * (F.col("y") - F.lit(cy))
-                    ).alias("d2"),
-                    F.lit(cid).alias("cid"),
-                )
-                for cid, cx, cy in cents
-            ]
-        )
-    )
-    scored = pts.withColumn("p", pairs).select(
-        F.col("p")[0]["cid"].alias("cid"),
-        F.round(
-            (F.sqrt(F.col("p")[1]["d2"]) - F.sqrt(F.col("p")[0]["d2"]))
-            / F.greatest(F.sqrt(F.col("p")[0]["d2"]), F.sqrt(F.col("p")[1]["d2"])),
-            9,
-        ).alias("s"),
-    )
-    return (
-        scored.groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("n_points"), F.round(F.avg("s"), 6).alias("mean_sil"))
-        .orderBy("cid")
-    )
-
-
-def _silhouette_kmeans_sql() -> str:
-    from raptor_service_spark.operators.clustering import kmeans_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    src = f"(SELECT doc_id AS id, {lng} AS x, {lat} AS y FROM documents)"
-    inner = kmeans_sql(src, k=8, n_iters=4)
-    # strip the final SELECT: reuse the CTE chain up to c4, then rescore
-    body = inner[inner.index("WITH") : inner.rindex("SELECT")].rstrip()
-    return f"""
-        {body},
-        ranked AS (
-            SELECT p.id, c.cid,
-                   (p.x - c.cx) * (p.x - c.cx) + (p.y - c.cy) * (p.y - c.cy)
-                       AS d2,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY p.id
-                       ORDER BY (p.x - c.cx) * (p.x - c.cx)
-                              + (p.y - c.cy) * (p.y - c.cy), c.cid) AS rn
-            FROM p CROSS JOIN c4 c),
-        sil AS (
-            SELECT r1.cid,
-                   ROUND((SQRT(r2.d2) - SQRT(r1.d2))
-                         / GREATEST(SQRT(r1.d2), SQRT(r2.d2)), 9) AS s
-            FROM (SELECT * FROM ranked WHERE rn = 1) r1
-            JOIN (SELECT * FROM ranked WHERE rn = 2) r2 USING (id))
-        SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_points,
-               ROUND(AVG(s), 6) AS mean_sil
-        FROM sil GROUP BY cid ORDER BY cid
-    """
-
-
-def q_symspell_lookup(spark, sf_dir):
-    """SymSpell-style spelling lookup: queries are document titles with
-    their 3rd character deleted (deterministic corruption, derived
-    identically in both engines from docs 0-49), the dictionary is every
-    distinct title with its frequency; candidate pairs come from the
-    DELETE-1 NEIGHBORHOOD equi-join (a string and its 1-deletes — edit
-    distance ≤1 ⇒ the variant sets intersect, so the join loses nothing),
-    verified with true levenshtein and resolved best-match-per-query by
-    (distance, frequency DESC, title). The delete-neighborhood trick is
-    what makes fuzzy lookup O(n·L) candidates instead of n×m — the lookup-
-    side complement of the PassJoin similarity JOIN in fuzzy_title_pairs."""
-    d = _read(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_TITLE_SPARK).alias("title")
-    )
-    dict_t = d.groupBy("title").agg(F.count(F.lit(1)).alias("freq"))
-    dels = (
-        "array_distinct(concat(array({0}), "
-        "transform(sequence(1, length({0})), "
-        "i -> concat(substring({0}, 1, i - 1), substring({0}, i + 1, length({0}))))))"
-    )
-    dvar = dict_t.select(
-        "title",
-        "freq",
-        F.explode(F.expr(dels.format("title"))).alias("v"),
-    )
-    q = d.filter(F.col("doc_id") < 50).select(
-        "doc_id",
-        F.concat(
-            F.substring("title", 1, 2),
-            F.expr("substring(title, 4, length(title))"),
-        ).alias("q"),
-    )
-    qvar = q.select(
-        "doc_id", "q", F.explode(F.expr(dels.format("q"))).alias("v")
-    )
-    cand = qvar.join(dvar, "v").select("doc_id", "q", "title", "freq").distinct()
-    hit = cand.withColumn("ed", F.levenshtein("q", "title")).filter(F.col("ed") <= 1)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("ed").asc(), F.col("freq").desc(), F.col("title").asc()
-    )
-    return (
-        hit.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "q", F.col("title").alias("match"), "ed", "freq")
-        .orderBy("doc_id")
-    )
-
-
-def _symspell_lookup_sql() -> str:
-    dels = (
-        "list_distinct(list_append(list_transform(generate_series(1, length({0})), "
-        "i -> substr({0}, 1, i - 1) || substr({0}, i + 1, length({0}))), {0}))"
-    )
-    return f"""
-        WITH d AS (SELECT doc_id, {_TITLE_SQL} AS title FROM documents),
-        dict_t AS (SELECT title, CAST(COUNT(*) AS BIGINT) AS freq
-                   FROM d GROUP BY 1),
-        dvar AS (SELECT title, freq, unnest({dels.format("title")}) AS v
-                 FROM dict_t),
-        q AS (SELECT doc_id,
-                     substr(title, 1, 2) || substr(title, 4, length(title)) AS q
-              FROM d WHERE doc_id < 50),
-        qvar AS (SELECT doc_id, q, unnest({dels.format("q")}) AS v FROM q),
-        cand AS (SELECT DISTINCT doc_id, q, title, freq
-                 FROM qvar JOIN dvar USING (v)),
-        hit AS (SELECT *, levenshtein(q, title) AS ed FROM cand
-                WHERE levenshtein(q, title) <= 1)
-        SELECT doc_id, q, title AS match, CAST(ed AS INTEGER) AS ed, freq
-        FROM (SELECT *, ROW_NUMBER() OVER (
-                  PARTITION BY doc_id
-                  ORDER BY ed ASC, freq DESC, title ASC) AS rn
-              FROM hit)
-        WHERE rn = 1 ORDER BY doc_id
-    """
-
-
-_LR_ETA = 0.5
-_LR_ROUNDS = 5
-
-
-def _logreg_feats_spark(d: DataFrame) -> DataFrame:
-    from raptor_service_spark.operators.dedup import words_col
-
-    ws = words_col(F.col("text"))
-    n_tok = F.size(ws)
-    stop = F.size(F.filter(ws, lambda t: (t == "the") | (t == "a")))
-    return d.select(
-        "doc_id",
-        F.when(F.col("lang") == "en", F.lit(1.0)).otherwise(F.lit(0.0)).alias("y"),
-        F.lit(1.0).alias("x0"),
-        F.round(n_tok / F.lit(100.0), 6).alias("x1"),
-        F.round(
-            (F.length(F.col("text")) - n_tok + 1) / n_tok.cast("double"), 6
-        ).alias("x2"),
-        F.round(stop / n_tok.cast("double"), 6).alias("x3"),
-    )
-
-
-def q_logreg_train(spark, sf_dir):
-    """Logistic regression by full-batch gradient descent, trained
-    relationally: y = (lang = 'en'), features are pinned 6-dp text stats
-    (token count/100, mean word length, the/a stopword ratio) + intercept;
-    5 rounds of w ← w − η/n · Σ x·(σ(w·x) − y) with σ pre-rounded to 9 dp
-    and weights re-rounded to 9 dp per round (the kmeans/PageRank
-    cross-engine protocol: the model lives as O(1) driver literals, each
-    round is ONE codegen agg over the feature table — the MLlib dataflow
-    shape). Output: final weights + training accuracy at threshold 0.5."""
-    d = _read(spark, sf_dir, "documents")
-    feats = _logreg_feats_spark(d).localCheckpoint(eager=True)
-    n = feats.count()
-    wv = [0.0, 0.0, 0.0, 0.0]
-    for _ in range(_LR_ROUNDS):
-        z = sum(F.col(f"x{j}") * F.lit(wv[j]) for j in range(4))
-        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 9)
-        g = feats.select(
-            *[
-                F.sum(F.round((p - F.col("y")) * F.col(f"x{j}"), 9)).alias(f"g{j}")
-                for j in range(4)
-            ]
-        ).collect()[0]
-        wv = [
-            _round_half_up(wv[j] - _LR_ETA * g[f"g{j}"] / n, 9).item()
-            for j in range(4)
-        ]
-    z = sum(F.col(f"x{j}") * F.lit(wv[j]) for j in range(4))
-    p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 9)
-    acc = feats.select(
-        F.round(
-            F.avg(
-                F.when((p > 0.5) == (F.col("y") > 0.5), F.lit(1.0)).otherwise(
-                    F.lit(0.0)
-                )
-            ),
-            6,
-        ).alias("accuracy")
-    ).collect()[0]["accuracy"]
-    return spark.createDataFrame(
-        [(wv[0], wv[1], wv[2], wv[3], float(acc))],
-        "w0 double, w1 double, w2 double, w3 double, accuracy double",
-    )
-
-
-def _logreg_feats_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    return f"""
-        SELECT doc_id,
-               CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-               1.0 AS x0,
-               ROUND(len({w}) / 100.0, 6) AS x1,
-               ROUND((length(text) - len({w}) + 1)
-                     / CAST(len({w}) AS DOUBLE), 6) AS x2,
-               ROUND(len(list_filter({w}, t -> t = 'the' OR t = 'a'))
-                     / CAST(len({w}) AS DOUBLE), 6) AS x3
-        FROM documents
-    """
-
-
-def _logreg_train_sql() -> str:
-    dot = "w.w0 * f.x0 + w.w1 * f.x1 + w.w2 * f.x2 + w.w3 * f.x3"
-    sig = f"ROUND(1.0 / (1.0 + EXP(-({dot}))), 9)"
-    steps = []
-    for t in range(1, _LR_ROUNDS + 1):
-        gsel = ", ".join(
-            f"SUM(ROUND(({sig} - f.y) * f.x{j}, 9)) AS g{j}" for j in range(4)
-        )
-        wsel = ", ".join(
-            f"ROUND(w.w{j} - {_LR_ETA} * g.g{j} / n.n, 9) AS w{j}" for j in range(4)
-        )
-        steps.append(
-            f"g{t} AS (SELECT {gsel} FROM feats f CROSS JOIN w{t - 1} w),\n"
-            f"        w{t} AS (SELECT {wsel} FROM w{t - 1} w "
-            f"CROSS JOIN g{t} g CROSS JOIN nn n)"
-        )
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH feats AS ({_logreg_feats_sql()}),
-        nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM feats),
-        w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3),
-        {chain},
-        acc AS (
-            SELECT ROUND(AVG(CASE WHEN ({sig} > 0.5) = (f.y > 0.5)
-                                  THEN 1.0 ELSE 0.0 END), 6) AS accuracy
-            FROM feats f CROSS JOIN w{_LR_ROUNDS} w)
-        SELECT w.w0, w.w1, w.w2, w.w3, a.accuracy
-        FROM w{_LR_ROUNDS} w CROSS JOIN acc a
-    """
-
-
 # ---------------------------------------------------------------------------
-# round-3 batch 3: Moran correlogram, Monge-Elkan ER similarity, media
-# scene-cut detection over decoded pixels
+# media scene-cut detection over decoded pixels
 # ---------------------------------------------------------------------------
-
-
-def q_moran_correlogram(spark, sf_dir):
-    """Spatial correlogram — Moran's I at ring-shell lags 1..3 over the
-    res-5 document density surface: the RANGE of spatial autocorrelation
-    (where I decays to ~E[I]), the autocorrelation analog of the
-    semivariogram's range reading. One point shuffle; each lag is an
-    O(occupied × shell) join over the cached cell-count table."""
-    from raptor_service_spark.operators.spatial_stats import moran_correlogram
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    return moran_correlogram(
-        d.withColumn("lat", lat).withColumn("lng", lng), res=5, max_lag=3
-    )
-
-
-def _moran_correlogram_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import moran_correlogram_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    return moran_correlogram_sql("documents", lat, lng, res=5, max_lag=3)
-
-
-def q_monge_elkan_pairs(spark, sf_dir):
-    """Monge-Elkan hybrid string similarity for entity resolution: for
-    first-word-blocked title pairs, ME(a→b) = mean over a's tokens of the
-    best levenshtein similarity against b's tokens (sim = 1 − d/max_len) —
-    the token-order-tolerant field comparator record linkage stacks layer
-    over Fellegi-Sunter agreement bits. Blocking keeps candidates to
-    same-first-word pairs (the SNM posture); each pair expands to ≤3×3
-    token comparisons — bounded fanout, codegen levenshtein. Symmetrized
-    as max(ME(a→b), ME(b→a)); per-token bests pre-round 9 dp. Top-20
-    non-identical pairs by (sim DESC, doc_a, doc_b)."""
-    from pyspark.sql import Window
-
-    d = _read(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_TITLE_SPARK).alias("title")
-    ).filter(F.col("doc_id") < 800)
-    a = d.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("title").alias("ta"),
-        F.substring_index("title", " ", 1).alias("blk"),
-    )
-    b = d.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("title").alias("tb"),
-        F.substring_index("title", " ", 1).alias("blk"),
-    )
-    pairs = a.join(b, "blk").filter(
-        (F.col("doc_a") < F.col("doc_b")) & (F.col("ta") != F.col("tb"))
-    )
-    toks = pairs.select(
-        "doc_a",
-        "doc_b",
-        "ta",
-        "tb",
-        F.posexplode(F.split("ta", " ")).alias("ia", "wa"),
-    ).select(
-        "doc_a", "doc_b", "tb", "ia", "wa",
-        F.posexplode(F.split("tb", " ")).alias("ib", "wb"),
-    )
-    sim = toks.withColumn(
-        "s",
-        F.lit(1.0)
-        - F.levenshtein("wa", "wb")
-        / F.greatest(F.length("wa"), F.length("wb")).cast("double"),
-    )
-    best_a = (
-        sim.groupBy("doc_a", "doc_b", "ia")
-        .agg(F.round(F.max("s"), 9).alias("best"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.round(F.avg("best"), 9).alias("me_ab"))
-    )
-    best_b = (
-        sim.groupBy("doc_a", "doc_b", "ib")
-        .agg(F.round(F.max("s"), 9).alias("best"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.round(F.avg("best"), 9).alias("me_ba"))
-    )
-    out = best_a.join(best_b, ["doc_a", "doc_b"]).select(
-        "doc_a",
-        "doc_b",
-        F.round(F.greatest("me_ab", "me_ba"), 6).alias("me_sim"),
-    )
-    return out.orderBy(F.col("me_sim").desc(), "doc_a", "doc_b").limit(20)
-
-
-def _monge_elkan_pairs_sql() -> str:
-    return f"""
-        WITH d AS (SELECT doc_id, {_TITLE_SQL} AS title FROM documents
-                   WHERE doc_id < 800),
-        t AS (SELECT doc_id, title, string_split(title, ' ')[1] AS blk FROM d),
-        pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   a.title AS ta, b.title AS tb
-            FROM t a JOIN t b ON a.blk = b.blk
-            WHERE a.doc_id < b.doc_id AND a.title != b.title),
-        toks AS (
-            SELECT doc_a, doc_b, ua.i AS ia, ua.w AS wa, ub.i AS ib, ub.w AS wb
-            FROM pairs,
-                 LATERAL (SELECT unnest(generate_series(1, len(string_split(ta, ' ')))) AS i,
-                                 unnest(string_split(ta, ' ')) AS w) ua,
-                 LATERAL (SELECT unnest(generate_series(1, len(string_split(tb, ' ')))) AS i,
-                                 unnest(string_split(tb, ' ')) AS w) ub),
-        sim AS (
-            SELECT doc_a, doc_b, ia, ib,
-                   1.0 - levenshtein(wa, wb)
-                         / CAST(GREATEST(length(wa), length(wb)) AS DOUBLE) AS s
-            FROM toks),
-        me_ab AS (
-            SELECT doc_a, doc_b, ROUND(AVG(best), 9) AS me_ab
-            FROM (SELECT doc_a, doc_b, ia, ROUND(MAX(s), 9) AS best
-                  FROM sim GROUP BY 1, 2, 3) GROUP BY 1, 2),
-        me_ba AS (
-            SELECT doc_a, doc_b, ROUND(AVG(best), 9) AS me_ba
-            FROM (SELECT doc_a, doc_b, ib, ROUND(MAX(s), 9) AS best
-                  FROM sim GROUP BY 1, 2, 3) GROUP BY 1, 2)
-        SELECT a.doc_a, a.doc_b, ROUND(GREATEST(a.me_ab, b.me_ba), 6) AS me_sim
-        FROM me_ab a JOIN me_ba b USING (doc_a, doc_b)
-        ORDER BY me_sim DESC, doc_a, doc_b LIMIT 20
-    """
 
 
 _SCENE_CUT_THRESH = 60.0
@@ -15205,2867 +3743,7 @@ def _media_scene_cuts_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# round-3 batch 4: permutation test, MaxScore pruning audit, MinHash
-# sketch-accuracy audit
-# ---------------------------------------------------------------------------
-
-_PERM_B = 200
-
-
-def q_permutation_test(spark, sf_dir):
-    """Two-sample permutation test (Fisher randomization): is the mean
-    n_chars of English docs different from the rest? Null distribution =
-    200 deterministic md5-keyed permutations — per replicate b every doc
-    gets key md5(doc_id·'#'·b), the n_en smallest keys form the pseudo-'en'
-    arm (EXACT group sizes, a true permutation, not Bernoulli relabeling) —
-    so the release replays identically everywhere (the dp_cell_counts
-    seeded-mechanism discipline). p = (1 + #{|diff_b| ≥ |obs|}) / (B+1).
-    Scale shape: the B-fold explode is declared O(B·n) and feeds ONE rank
-    window partitioned by replicate + one agg; all means come from exact
-    integer sums, so the ≥ comparisons are bit-identical cross-engine."""
-    from pyspark.sql import Window
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    base = d.agg(
-        F.sum(F.when(F.col("lang") == "en", F.col("n_chars"))).alias("s_en"),
-        F.count(F.when(F.col("lang") == "en", F.lit(1))).alias("n_en"),
-        F.sum(F.when(F.col("lang") != "en", F.col("n_chars"))).alias("s_ot"),
-        F.count(F.when(F.col("lang") != "en", F.lit(1))).alias("n_ot"),
-    )
-    obs = base.select(
-        (F.col("s_en") / F.col("n_en") - F.col("s_ot") / F.col("n_ot")).alias(
-            "obs"
-        ),
-        "n_en",
-    )
-    reps = d.select(
-        "doc_id",
-        "n_chars",
-        F.explode(F.sequence(F.lit(1), F.lit(_PERM_B))).alias("b"),
-    ).withColumn(
-        "k", F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#"), F.col("b")))
-    )
-    w = Window.partitionBy("b").orderBy("k", "doc_id")
-    ranked = reps.withColumn("rk", F.row_number().over(w)).crossJoin(
-        F.broadcast(obs)
-    )
-    diffs = ranked.groupBy("b").agg(
-        (
-            F.sum(F.when(F.col("rk") <= F.col("n_en"), F.col("n_chars")))
-            / F.max("n_en")
-            - F.sum(F.when(F.col("rk") > F.col("n_en"), F.col("n_chars")))
-            / (F.count(F.lit(1)) - F.max("n_en"))
-        ).alias("diff"),
-        F.max(F.abs(F.col("obs"))).alias("abs_obs"),
-    )
-    return (
-        diffs.agg(
-            F.count(F.lit(1)).alias("n_perms"),
-            F.sum(
-                F.when(F.abs(F.col("diff")) >= F.col("abs_obs"), 1).otherwise(0)
-            ).alias("n_extreme"),
-            F.round(F.max(F.col("abs_obs")), 6).alias("abs_obs_diff"),
-        )
-        .select(
-            "abs_obs_diff",
-            "n_perms",
-            F.col("n_extreme").cast("long").alias("n_extreme"),
-            F.round(
-                (F.lit(1) + F.col("n_extreme")) / (F.lit(_PERM_B) + F.lit(1.0)), 6
-            ).alias("p_value"),
-        )
-    )
-
-
-def _permutation_test_sql() -> str:
-    return f"""
-        WITH d AS (SELECT doc_id, lang, n_chars FROM documents),
-        base AS (
-            SELECT SUM(CASE WHEN lang = 'en' THEN n_chars END) AS s_en,
-                   COUNT(CASE WHEN lang = 'en' THEN 1 END) AS n_en,
-                   SUM(CASE WHEN lang != 'en' THEN n_chars END) AS s_ot,
-                   COUNT(CASE WHEN lang != 'en' THEN 1 END) AS n_ot
-            FROM d),
-        obs AS (SELECT CAST(s_en AS DOUBLE) / n_en
-                       - CAST(s_ot AS DOUBLE) / n_ot AS obs, n_en FROM base),
-        reps AS (
-            SELECT doc_id, n_chars, b.b,
-                   md5(CAST(doc_id AS VARCHAR) || '#' || b.b) AS k
-            FROM d CROSS JOIN (SELECT unnest(generate_series(1, {_PERM_B})) AS b) b),
-        ranked AS (
-            SELECT n_chars, b,
-                   ROW_NUMBER() OVER (PARTITION BY b ORDER BY k, doc_id) AS rk
-            FROM reps),
-        diffs AS (
-            SELECT r.b,
-                   CAST(SUM(CASE WHEN r.rk <= o.n_en THEN r.n_chars END)
-                        AS DOUBLE) / MAX(o.n_en)
-                   - CAST(SUM(CASE WHEN r.rk > o.n_en THEN r.n_chars END)
-                          AS DOUBLE) / (COUNT(*) - MAX(o.n_en)) AS diff,
-                   MAX(ABS(o.obs)) AS abs_obs
-            FROM ranked r CROSS JOIN obs o GROUP BY r.b)
-        SELECT ROUND(MAX(abs_obs), 6) AS abs_obs_diff,
-               CAST(COUNT(*) AS BIGINT) AS n_perms,
-               CAST(SUM(CASE WHEN ABS(diff) >= abs_obs THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_extreme,
-               ROUND((1 + SUM(CASE WHEN ABS(diff) >= abs_obs THEN 1 ELSE 0 END))
-                     / ({_PERM_B} + 1.0), 6) AS p_value
-        FROM diffs
-    """
-
-
-_MAXSCORE_Q = ["hash", "join", "scan", "window"]
-_MS_K1, _MS_B, _MS_TOPK = 1.2, 0.75, 10
-
-
-def q_maxscore_pruning(spark, sf_dir):
-    """MaxScore static-pruning audit — the engine-internals statistic
-    behind WAND/MaxScore DAAT retrieval: per query term the BM25 upper
-    bound UB_t = max over docs; a candidate doc whose Σ UB over ITS OWN
-    matching terms cannot beat θ (the exact 10th-best full score) is
-    skippable without scoring. Reported: candidates, θ, skippable count +
-    fraction — how much of the postings traversal the bound eliminates.
-    All on aggregated (doc, term, tf) rows; per-term scores pre-round 9 dp
-    (the BM25 float discipline)."""
-    from raptor_service_spark.operators.dedup import words_col
-
-    d = _read(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(words_col(F.col("text"))).alias("term"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    tf = (
-        toks.filter(F.col("term").isin(_MAXSCORE_Q))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_t = tf.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
-    scored = (
-        tf.join(dl, "doc_id")
-        .join(F.broadcast(df_t), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "score",
-            F.round(
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1.0
-                )
-                * F.col("tf")
-                * (_MS_K1 + 1.0)
-                / (
-                    F.col("tf")
-                    + _MS_K1
-                    * (1.0 - _MS_B + _MS_B * F.col("dl") / F.col("avgdl"))
-                ),
-                9,
-            ),
-        )
-    )
-    full = scored.groupBy("doc_id").agg(F.round(F.sum("score"), 6).alias("s"))
-    theta = full.orderBy(F.col("s").desc(), "doc_id").limit(_MS_TOPK).agg(
-        F.min("s").alias("theta")
-    )
-    ub = scored.groupBy("term").agg(F.max("score").alias("ub"))
-    per_doc_ub = (
-        scored.join(F.broadcast(ub), "term")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum("ub"), 6).alias("ub_sum"))
-    )
-    return (
-        per_doc_ub.crossJoin(F.broadcast(theta))
-        .agg(
-            F.count(F.lit(1)).alias("n_candidates"),
-            F.max("theta").alias("theta"),
-            F.sum(
-                F.when(F.col("ub_sum") < F.col("theta"), 1).otherwise(0)
-            ).cast("long").alias("n_skippable"),
-        )
-        .select(
-            "n_candidates",
-            "theta",
-            "n_skippable",
-            F.round(F.col("n_skippable") / F.col("n_candidates"), 6).alias(
-                "skip_frac"
-            ),
-        )
-    )
-
-
-def _maxscore_pruning_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    qterms = ", ".join(f"'{t}'" for t in _MAXSCORE_Q)
-    return f"""
-        WITH toks AS (SELECT doc_id, unnest({w}) AS term FROM documents),
-        dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl
-               FROM toks GROUP BY 1),
-        stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, AVG(dl) AS avgdl
-                  FROM dl),
-        tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-               FROM toks WHERE term IN ({qterms}) GROUP BY 1, 2),
-        df_t AS (SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-                 FROM tf GROUP BY 1),
-        scored AS (
-            SELECT tf.doc_id, tf.term,
-                   ROUND(LN((s.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0)
-                         * tf.tf * ({_MS_K1} + 1.0)
-                         / (tf.tf + {_MS_K1} * (1.0 - {_MS_B}
-                            + {_MS_B} * dl.dl / s.avgdl)), 9) AS score
-            FROM tf JOIN dl USING (doc_id) JOIN df_t d USING (term)
-            CROSS JOIN stats s),
-        full_s AS (SELECT doc_id, ROUND(SUM(score), 6) AS s
-                   FROM scored GROUP BY 1),
-        theta AS (SELECT MIN(s) AS theta FROM (
-                      SELECT s FROM full_s ORDER BY s DESC, doc_id
-                      LIMIT {_MS_TOPK})),
-        ub AS (SELECT term, MAX(score) AS ub FROM scored GROUP BY 1),
-        per_doc AS (SELECT sc.doc_id, ROUND(SUM(u.ub), 6) AS ub_sum
-                    FROM scored sc JOIN ub u USING (term) GROUP BY 1)
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_candidates,
-               MAX(t.theta) AS theta,
-               CAST(SUM(CASE WHEN p.ub_sum < t.theta THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_skippable,
-               ROUND(SUM(CASE WHEN p.ub_sum < t.theta THEN 1 ELSE 0 END)
-                     / CAST(COUNT(*) AS DOUBLE), 6) AS skip_frac
-        FROM per_doc p CROSS JOIN theta t
-    """
-
-
-_MHA_BANDS = 8
-
-
-def q_minhash_jaccard_audit(spark, sf_dir):
-    """Sketch-accuracy audit for MinHash: over every band-candidate pair,
-    the signature estimate (fraction of equal minhash components) next to
-    the EXACT shingle Jaccard and their absolute error — the measurement
-    that justifies (bands, threshold) choices before a 100 TB dedup run.
-    Top-20 worst-estimated pairs. Same candidacy predicate and signature
-    arithmetic as minhash_pairs; exact Jaccard via the shared distinct
-    shingle stream (one gram equi-join, prefix-bounded candidates)."""
-    from raptor_service_spark.operators.dedup import shingle_rows
-
-    docs = _docs_with_dups(spark, sf_dir)
-    ex = _shared_shingles3(spark, sf_dir)
-    if ex is None:
-        ex = shingle_rows(docs, "text", "doc_id", 3)
-    aggs = []
-    for g in range(_MHA_BANDS // 4):
-        h = F.md5(F.concat(F.lit(f"{g}|"), F.col("g")))
-        for c in range(4):
-            aggs.append(
-                F.min(F.substring(h, c * 8 + 1, 8)).alias(f"h{g * 4 + c}")
-            )
-    wide = ex.groupBy("id").agg(*aggs).localCheckpoint(eager=True)
-    buckets = wide.select(
-        "id",
-        F.posexplode(F.array(*[f"h{b}" for b in range(_MHA_BANDS)])).alias(
-            "band", "h"
-        ),
-    )
-    cand = (
-        buckets.alias("a")
-        .join(
-            buckets.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    wa = wide.select(
-        F.col("id").alias("doc_a"), *[F.col(f"h{b}").alias(f"a{b}") for b in range(_MHA_BANDS)]
-    )
-    wb = wide.select(
-        F.col("id").alias("doc_b"), *[F.col(f"h{b}").alias(f"b{b}") for b in range(_MHA_BANDS)]
-    )
-    est = cand.join(wa, "doc_a").join(wb, "doc_b").select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            sum(
-                F.when(F.col(f"a{b}") == F.col(f"b{b}"), 1).otherwise(0)
-                for b in range(_MHA_BANDS)
-            )
-            / F.lit(float(_MHA_BANDS)),
-            6,
-        ).alias("est_sim"),
-    )
-    dg = ex.dropDuplicates(["id", "g"])
-    sizes = dg.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        cand.join(dg.select(F.col("id").alias("doc_a"), "g"), "doc_a")
-        .join(dg.select(F.col("id").alias("doc_b"), "g"), ["doc_b", "g"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    exact = (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .join(sizes.select(F.col("id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(sizes.select(F.col("id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.coalesce("inter", F.lit(0))
-                / (F.col("na") + F.col("nb") - F.coalesce("inter", F.lit(0))).cast(
-                    "double"
-                ),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-    out = est.join(exact, ["doc_a", "doc_b"]).select(
-        "doc_a",
-        "doc_b",
-        "est_sim",
-        "jaccard",
-        F.round(F.abs(F.col("est_sim") - F.col("jaccard")), 6).alias("abs_err"),
-    )
-    return out.orderBy(F.col("abs_err").desc(), "doc_a", "doc_b").limit(20)
-
-
-def _minhash_jaccard_audit_sql() -> str:
-    from raptor_service_spark.operators.dedup import (
-        jaccard_sql,
-        minhash_sig_sql,
-        shingles_sql,
-    )
-
-    sh = shingles_sql("text", 3)
-    sig = minhash_sig_sql("sh", _MHA_BANDS)
-    jac = jaccard_sql("a.sh", "b.sh")
-    eq = (
-        f"len(list_filter(generate_series(1, {_MHA_BANDS}), "
-        f"i -> a.sig[i] = b.sig[i])) / {float(_MHA_BANDS)}"
-    )
-    return f"""
-        WITH d AS (SELECT doc_id AS id, {sh} AS sh FROM {_DOCS_WITH_DUPS_SQL}),
-        s AS (SELECT id, sh, {sig} AS sig FROM d)
-        SELECT a.id AS doc_a, b.id AS doc_b,
-               ROUND({eq}, 6) AS est_sim,
-               ROUND({jac}, 6) AS jaccard,
-               ROUND(ABS(ROUND({eq}, 6) - ROUND({jac}, 6)), 6) AS abs_err
-        FROM s a JOIN s b ON a.id < b.id
-        WHERE list_has_any(a.sig, b.sig)
-        ORDER BY abs_err DESC, doc_a, doc_b LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 5: Markov removal-effect attribution, graph eccentricity,
-# l-diversity / t-closeness privacy audit
-# ---------------------------------------------------------------------------
-
-_MKV_CHANNELS = ["click", "error", "signup", "view"]
-_MKV_ROUNDS = 20
-
-
-def _mkv_trans_spark(spark, sf_dir) -> DataFrame:
-    """(src, dst, p): first-order journey transition probabilities.
-    Journeys = per-user touches (non-purchase events strictly before the
-    first purchase, ordered by ts/event_id), absorbed into 'conv' if the
-    user purchased else 'null'; 'start' precedes the first touch (users
-    whose first event is the purchase transition start→conv directly)."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
-    fp = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min(F.struct("ts", "event_id")).alias("fp"))
-    )
-    t = ev.filter(F.col("event_type") != "purchase").join(fp, "user_id", "left")
-    touches = t.filter(
-        F.col("fp").isNull() | (F.struct("ts", "event_id") < F.col("fp"))
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = touches.select(
-        "user_id",
-        F.col("event_type").alias("ch"),
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n"),
-        F.lead("event_type").over(w).alias("nxt"),
-    ).join(fp.select("user_id", F.lit(1).alias("has_fp")), "user_id", "left")
-    starts = seq.filter(F.col("rn") == 1).select(
-        F.lit("start").alias("src"), F.col("ch").alias("dst")
-    )
-    mids = seq.filter(F.col("nxt").isNotNull()).select(
-        F.col("ch").alias("src"), F.col("nxt").alias("dst")
-    )
-    ends = seq.filter(F.col("rn") == F.col("n")).select(
-        F.col("ch").alias("src"),
-        F.when(F.col("has_fp") == 1, F.lit("conv")).otherwise(F.lit("null")).alias("dst"),
-    )
-    only_purchase = (
-        fp.join(
-            touches.select("user_id").distinct(), "user_id", "left_anti"
-        ).select(F.lit("start").alias("src"), F.lit("conv").alias("dst"))
-    )
-    trans = starts.unionByName(mids).unionByName(ends).unionByName(only_purchase)
-    cnt = trans.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("c"))
-    tot = cnt.groupBy("src").agg(F.sum("c").alias("n"))
-    return cnt.join(tot, "src").select(
-        "src", "dst", (F.col("c").cast("double") / F.col("n")).alias("p")
-    )
-
-
-_MKV_TRANS_SQL = """
-        ev AS (SELECT user_id, ts, event_id, event_type FROM events),
-        fp AS (SELECT user_id, MIN(ROW(ts, event_id)) AS fp
-               FROM ev WHERE event_type = 'purchase' GROUP BY 1),
-        touches AS (
-            SELECT e.user_id, e.ts, e.event_id, e.event_type
-            FROM ev e LEFT JOIN fp USING (user_id)
-            WHERE e.event_type != 'purchase'
-              AND (fp.fp IS NULL OR ROW(e.ts, e.event_id) < fp.fp)),
-        seq AS (
-            SELECT t.user_id, t.event_type AS ch,
-                   ROW_NUMBER() OVER (PARTITION BY t.user_id
-                                      ORDER BY t.ts, t.event_id) AS rn,
-                   COUNT(*) OVER (PARTITION BY t.user_id) AS n,
-                   LEAD(t.event_type) OVER (PARTITION BY t.user_id
-                                            ORDER BY t.ts, t.event_id) AS nxt,
-                   CASE WHEN fp.user_id IS NOT NULL THEN 1 END AS has_fp
-            FROM touches t LEFT JOIN fp ON t.user_id = fp.user_id),
-        trans_raw AS (
-            SELECT 'start' AS src, ch AS dst FROM seq WHERE rn = 1
-            UNION ALL
-            SELECT ch, nxt FROM seq WHERE nxt IS NOT NULL
-            UNION ALL
-            SELECT ch, CASE WHEN has_fp = 1 THEN 'conv' ELSE 'null' END
-            FROM seq WHERE rn = n
-            UNION ALL
-            SELECT 'start', 'conv' FROM fp
-            WHERE fp.user_id NOT IN (SELECT DISTINCT user_id FROM touches)),
-        cnt AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS c
-                FROM trans_raw GROUP BY 1, 2),
-        trans AS MATERIALIZED (
-            SELECT cnt.src, cnt.dst, CAST(cnt.c AS DOUBLE) / tot.n AS p
-            FROM cnt JOIN (SELECT src, SUM(c) AS n FROM cnt GROUP BY 1) tot
-              USING (src))
-"""
-
-
-def q_markov_attribution(spark, sf_dir):
-    """Markov removal-effect channel attribution (the data-driven
-    alternative to Shapley in shapley_attribution): first-order journey
-    chain over touch channels with absorbing conv/null; per channel r the
-    chain is re-solved with r knocked out (transitions into r fail to
-    null) and the attribution is the normalized conversion-probability
-    drop. Conversion probabilities come from 20 unrolled value-iteration
-    rounds (v ← b + T·v, 9-dp per round — the PageRank discipline). The
-    transition matrix is O(channels²) and collected to the driver (the
-    kmeans O(k)-literals protocol); journeys are built in ONE user-window
-    pass."""
-    rows = _mkv_trans_spark(spark, sf_dir).collect()
-    p = {(r.src, r.dst): r.p for r in rows}
-    states = ["start"] + _MKV_CHANNELS
-
-    def solve(excluded: str | None) -> float:
-        v = {s: 0.0 for s in states}
-        for _ in range(_MKV_ROUNDS):
-            nv = {}
-            for s in states:
-                if s == excluded:
-                    continue
-                acc = p.get((s, "conv"), 0.0)
-                for c in _MKV_CHANNELS:
-                    if c != excluded:
-                        acc += p.get((s, c), 0.0) * v[c]
-                nv[s] = float(_round_half_up(acc, 9))
-            for s in states:
-                v[s] = nv.get(s, 0.0)
-        return v["start"]
-
-    v_full = solve(None)
-    out = []
-    effects = {}
-    for ch in _MKV_CHANNELS:
-        effects[ch] = float(_round_half_up((v_full - solve(ch)) / v_full, 9))
-    tot_eff = float(np.sum([effects[c] for c in _MKV_CHANNELS]))
-    for ch in _MKV_CHANNELS:
-        out.append(
-            (
-                ch,
-                float(_round_half_up(effects[ch], 6)),
-                float(_round_half_up(effects[ch] / tot_eff, 6)),
-                float(_round_half_up(v_full, 6)),
-            )
-        )
-    return spark.createDataFrame(
-        out, "channel string, removal_effect double, attribution double, p_conv double"
-    ).orderBy("channel")
-
-
-def _markov_attribution_sql() -> str:
-    states = ["start"] + _MKV_CHANNELS
-
-    def chain(tag: str, excluded: str | None) -> tuple[str, str]:
-        st = [s for s in states if s != excluded]
-        chs = [c for c in _MKV_CHANNELS if c != excluded]
-        sts = ", ".join(f"('{s}')" for s in st)
-        steps = [
-            f"v{tag}0(s, v) AS MATERIALIZED (SELECT s, 0.0 FROM (VALUES {sts}) st(s))"
-        ]
-        for t in range(1, _MKV_ROUNDS + 1):
-            chl = ", ".join(f"'{c}'" for c in chs)
-            steps.append(
-                f"""v{tag}{t} AS MATERIALIZED (
-            SELECT st.s,
-                   ROUND(COALESCE(bc.p, 0.0) + COALESCE(tv.acc, 0.0), 9) AS v
-            FROM (SELECT s FROM v{tag}0) st
-            LEFT JOIN (SELECT src, p FROM trans WHERE dst = 'conv') bc
-              ON bc.src = st.s
-            LEFT JOIN (
-                SELECT tr.src, SUM(tr.p * pv.v) AS acc
-                FROM trans tr JOIN v{tag}{t - 1} pv ON tr.dst = pv.s
-                WHERE tr.dst IN ({chl})
-                GROUP BY tr.src) tv
-              ON tv.src = st.s
-        )"""
-            )
-        final = f"(SELECT v FROM v{tag}{_MKV_ROUNDS} WHERE s = 'start')"
-        return ",\n        ".join(steps), final
-
-    chains, finals = [], {}
-    c_sql, f_sql = chain("f", None)
-    chains.append(c_sql)
-    finals["__full__"] = f_sql
-    for ch in _MKV_CHANNELS:
-        c_sql, f_sql = chain(ch, ch)
-        chains.append(c_sql)
-        finals[ch] = f_sql
-    eff = ", ".join(
-        f"ROUND(({finals['__full__']} - {finals[ch]}) / {finals['__full__']}, 9)"
-        f" AS e_{ch}"
-        for ch in _MKV_CHANNELS
-    )
-    rows = ", ".join(
-        f"('{ch}', e_{ch})" for ch in _MKV_CHANNELS
-    )
-    tot = " + ".join(f"e_{ch}" for ch in _MKV_CHANNELS)
-    chain_sql = ",\n        ".join(chains)
-    return f"""
-        WITH {_MKV_TRANS_SQL.strip()},
-        {chain_sql},
-        eff AS (SELECT {eff}),
-        unp AS (SELECT u.channel, u.e, ({tot}) AS tot,
-                       {finals['__full__']} AS vf
-                FROM eff, LATERAL (VALUES {rows}) u(channel, e))
-        SELECT channel, ROUND(e, 6) AS removal_effect,
-               ROUND(e / tot, 6) AS attribution,
-               ROUND(vf, 6) AS p_conv
-        FROM unp ORDER BY channel
-    """
-
-
-def q_graph_eccentricity(spark, sf_dir):
-    """Eccentricity sample / diameter lower bound of the occupied res-4
-    cell lattice: BFS hop labeling from the 4 busiest cells (the standard
-    multi-source diameter probe — exact diameter is all-pairs). Per seed:
-    reached-set size and eccentricity (max hop within the 8-round cap).
-    Seeds are O(1) driver rows recomputed identically as scalar subqueries
-    in the oracle; each BFS round is one frontier equi-join + anti-join
-    (operators/cell_graph.py:bfs_hops)."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.cell_graph import _adjacency, bfs_hops
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = d.select(cell_encode_col(lat, lng, 4).alias("cell"))
-    seeds = [
-        r.cell
-        for r in occ.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), "cell")
-        .limit(4)
-        .collect()
-    ]
-    # Build the occupied lattice + adjacency ONCE (they are seed-independent)
-    # and run the 4 BFS loops on concurrent driver threads — each round is a
-    # small latency-bound job, so overlapping the seeds' rounds turns the
-    # probe's wall cost from sum-of-seeds into ~max-of-seeds.
-    occ_d = occ.distinct().localCheckpoint(eager=True)
-    edges = _adjacency(occ_d, 4).localCheckpoint(eager=True)
-
-    def _one_seed(s):
-        h = bfs_hops(occ_d, s, res=4, max_hops=8, edges=edges)
-        return h.agg(
-            F.lit(s).alias("seed_cell"),
-            F.count(F.lit(1)).alias("n_reached"),
-            F.max("hops").alias("ecc"),
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(seeds)) as ex:
-        outs = list(ex.map(_one_seed, sorted(seeds)))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("seed_cell")
-
-
-def _graph_eccentricity_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import bfs_hops_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    base = f"SELECT {cell} AS cell FROM documents"
-    blocks = []
-    for k in range(4):
-        seed = (
-            f"(SELECT cell FROM (SELECT cell, COUNT(*) AS c FROM ({base}) "
-            f"GROUP BY 1 ORDER BY c DESC, cell LIMIT 1 OFFSET {k}))"
-        )
-        inner = bfs_hops_sql(base, seed, res=4, max_hops=8)
-        blocks.append(
-            f"""SELECT {seed} AS seed_cell,
-                   CAST(COUNT(*) AS BIGINT) AS n_reached,
-                   CAST(MAX(hops) AS BIGINT) AS ecc
-            FROM ({inner})"""
-        )
-    union = "\n        UNION ALL\n        ".join(blocks)
-    return f"SELECT * FROM ({union}) ORDER BY seed_cell"
-
-
-_PRIV_MIN_K = 5
-
-
-def q_ldiv_tcloseness(spark, sf_dir):
-    """l-diversity + t-closeness audit of the res-4 cell quasi-identifier
-    (the companions of kanon_cells' k-anonymity): per cell with k ≥ 5 docs,
-    l = distinct langs (low l ⇒ attribute disclosure) and the t-closeness
-    distance = total variation between the cell's lang distribution and
-    the global one (categorical EMD). Top-20 riskiest cells by (l ASC,
-    tvd DESC, cell). Two aggs over the (cell, lang) table + a broadcast
-    join of the O(langs) global distribution; per-lang terms pre-round
-    9 dp."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "lang")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("cell", cell_encode_col(lat, lng, 4))
-    cl = pts.groupBy("cell", "lang").agg(F.count(F.lit(1)).alias("c"))
-    ck = cl.groupBy("cell").agg(
-        F.sum("c").alias("k"), F.count(F.lit(1)).alias("l_div")
-    ).filter(F.col("k") >= _PRIV_MIN_K)
-    gl = (
-        d.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("gc"))
-        .crossJoin(F.broadcast(d.agg(F.count(F.lit(1)).alias("n"))))
-        .select("lang", (F.col("gc").cast("double") / F.col("n")).alias("gp"))
-    )
-    # dense (cell, lang) grid so absent langs contribute |0 - gp|
-    dense = (
-        ck.select("cell", "k", "l_div")
-        .crossJoin(F.broadcast(gl))
-        .join(cl, ["cell", "lang"], "left")
-        .withColumn(
-            "term",
-            F.round(
-                F.abs(
-                    F.coalesce("c", F.lit(0)).cast("double") / F.col("k")
-                    - F.col("gp")
-                ),
-                9,
-            ),
-        )
-    )
-    out = dense.groupBy("cell", "k", "l_div").agg(
-        F.round(F.lit(0.5) * F.sum("term"), 6).alias("tvd")
-    )
-    return out.orderBy(
-        F.col("l_div").asc(), F.col("tvd").desc(), F.col("cell").asc()
-    ).limit(20)
-
-
-def _ldiv_tcloseness_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH pts AS (SELECT {cell} AS cell, lang FROM documents),
-        cl AS (SELECT cell, lang, CAST(COUNT(*) AS BIGINT) AS c
-               FROM pts GROUP BY 1, 2),
-        ck AS (SELECT cell, CAST(SUM(c) AS BIGINT) AS k,
-                      CAST(COUNT(*) AS BIGINT) AS l_div
-               FROM cl GROUP BY 1 HAVING SUM(c) >= {_PRIV_MIN_K}),
-        gl AS (SELECT lang, CAST(COUNT(*) AS DOUBLE)
-                            / (SELECT COUNT(*) FROM documents) AS gp
-               FROM documents GROUP BY 1),
-        dense AS (
-            SELECT ck.cell, ck.k, ck.l_div,
-                   ROUND(ABS(CAST(COALESCE(cl.c, 0) AS DOUBLE) / ck.k
-                             - gl.gp), 9) AS term
-            FROM ck CROSS JOIN gl
-            LEFT JOIN cl ON cl.cell = ck.cell AND cl.lang = gl.lang)
-        SELECT cell, k, l_div, ROUND(0.5 * SUM(term), 6) AS tvd
-        FROM dense GROUP BY 1, 2, 3
-        ORDER BY l_div ASC, tvd DESC, cell ASC LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 6: directional semivariogram (anisotropy), cell lead-lag
-# cross-correlation
-# ---------------------------------------------------------------------------
-
-_VG_TAN22 = 0.4142135623730951  # tan(22.5°) — shared literal, no trig calls
-
-
-def q_semivariogram_dir(spark, sf_dir):
-    """DIRECTIONAL semivariogram — the anisotropy probe kriging QA runs
-    after the omnidirectional one: pair (v_i−v_j)²/2 binned by separation
-    distance AND by 4 bearing sectors (E-W, NE-SW, N-S, NW-SE, 45° wide).
-    Sector classification is pure sign/ratio arithmetic against the
-    tan(22.5°) literal — NO atan2, so there is no libm cross-engine term
-    anywhere (boundaries land in sectors 0/2 by the ≤ rule). Pairs come
-    from the SHARED persisted ε-ring pair stream (`_vg_pairs` — one ring
-    join feeds this and the omnidirectional bins); output is
-    O(sectors×bins)."""
-    pr = _vg_pairs(spark, sf_dir)
-    dx = F.col("dx")
-    dy = F.col("dy")
-    adx, ady = F.abs(dx), F.abs(dy)
-    sector = (
-        F.when(ady <= adx * F.lit(_VG_TAN22), F.lit(0))
-        .when(adx <= ady * F.lit(_VG_TAN22), F.lit(2))
-        .when(dx * dy > 0, F.lit(1))
-        .otherwise(F.lit(3))
-    )
-    dv = F.col("va") - F.col("vb")
-    pairs = pr.select(
-        sector.alias("sector"),
-        F.floor(F.col("dist") / F.lit(_VG_BINW)).cast("long").alias("bin"),
-        F.col("dist"),
-        F.round(dv * dv, 9).alias("sq"),
-    ).filter(F.col("bin") < F.lit(int(_VG_HMAX / _VG_BINW)))
-    return (
-        pairs.groupBy("sector", "bin")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.round(F.round(F.sum("dist"), 9) / F.count(F.lit(1)), 6).alias("avg_h"),
-            F.round(
-                F.round(F.sum("sq"), 9) / (F.lit(2.0) * F.count(F.lit(1))), 6
-            ).alias("gamma"),
-        )
-        .orderBy("sector", "bin")
-    )
-
-
-def _semivariogram_dir_sql() -> str:
-    # mirror _vg_points + brute-force pair join (oracle may be quadratic)
-    lat, lng = _latlng_sql("event_id")
-    pts = (
-        f"SELECT event_id, value, {lat} AS lat, {lng} AS lng FROM events "
-        f"WHERE event_id % {_VG_SAMPLE_MOD} = 0"
-    )
-    return f"""
-        WITH p AS ({pts}),
-        pr AS (
-            SELECT a.value AS va, b.value AS vb,
-                   b.lng - a.lng AS dx, b.lat - a.lat AS dy,
-                   ROUND(SQRT((a.lat - b.lat) * (a.lat - b.lat)
-                              + (a.lng - b.lng) * (a.lng - b.lng)), 6) AS dist
-            FROM p a JOIN p b ON a.event_id < b.event_id),
-        cls AS (
-            SELECT CASE
-                       WHEN ABS(dy) <= ABS(dx) * {_VG_TAN22!r} THEN 0
-                       WHEN ABS(dx) <= ABS(dy) * {_VG_TAN22!r} THEN 2
-                       WHEN dx * dy > 0 THEN 1
-                       ELSE 3 END AS sector,
-                   CAST(FLOOR(dist / {_VG_BINW!r}) AS BIGINT) AS bin,
-                   dist, ROUND((va - vb) * (va - vb), 9) AS sq
-            FROM pr WHERE dist <= {_VG_HMAX!r})
-        SELECT sector, bin, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-               ROUND(ROUND(SUM(dist), 9) / COUNT(*), 6) AS avg_h,
-               ROUND(ROUND(SUM(sq), 9) / (2.0 * COUNT(*)), 6) AS gamma
-        FROM cls WHERE bin < {int(_VG_HMAX / _VG_BINW)}
-        GROUP BY 1, 2 ORDER BY 1, 2
-    """
-
-
-_XC_MAX_LAG = 3
-
-
-def q_cell_xcorr(spark, sf_dir):
-    """Lead-lag cross-correlation between the two busiest res-3 cells'
-    hourly event-count series (lags −3..+3): does activity in the hub
-    PRECEDE activity in the runner-up (propagation) or track it? Series
-    are dense over the global hour span (missing hours = 0 — the honest
-    grid; join-only overlap would bias r); Pearson r per lag from exact
-    integer sums. Scale shape: one (cell, hour) agg; the dense grid and
-    the 7-lag explode run on the two O(hours) aggregated series."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        cell_encode_col(lat, lng, 3).alias("cell"),
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(3600000000)
-        ).alias("hr"),
-    )
-    top2 = [
-        r.cell
-        for r in pts.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), "cell")
-        .limit(2)
-        .collect()
-    ]
-    a_cell, b_cell = sorted(top2)
-    span = pts.agg(F.min("hr").alias("h0"), F.max("hr").alias("h1"))
-    grid = span.select(
-        F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("hr")
-    )
-    cnts = (
-        pts.filter(F.col("cell").isin([a_cell, b_cell]))
-        .groupBy("cell", "hr")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    xa = grid.join(
-        cnts.filter(F.col("cell") == a_cell).select("hr", F.col("c").alias("xa")),
-        "hr",
-        "left",
-    ).select("hr", F.coalesce("xa", F.lit(0)).alias("xa"))
-    xb = grid.join(
-        cnts.filter(F.col("cell") == b_cell).select("hr", F.col("c").alias("xb")),
-        "hr",
-        "left",
-    ).select(F.col("hr").alias("hrb"), F.coalesce("xb", F.lit(0)).alias("xb"))
-    lags = xa.crossJoin(
-        spark.range(-_XC_MAX_LAG, _XC_MAX_LAG + 1).select(
-            F.col("id").alias("lag")
-        )
-    )
-    j = lags.join(xb, lags.hr + lags.lag == xb.hrb).select("lag", "xa", "xb")
-    s = j.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("xa").alias("sx"),
-        F.sum("xb").alias("sy"),
-        F.sum(F.col("xa") * F.col("xa")).alias("sxx"),
-        F.sum(F.col("xb") * F.col("xb")).alias("syy"),
-        F.sum(F.col("xa") * F.col("xb")).alias("sxy"),
-    )
-    r = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / F.sqrt(
-        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-        * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-    )
-    return s.select(
-        "lag", F.col("n").alias("n_hours"), F.round(r, 6).alias("xcorr")
-    ).orderBy("lag")
-
-
-def _cell_xcorr_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH pts AS (
-            SELECT {cell} AS cell,
-                   CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) AS hr
-            FROM events),
-        top2 AS (SELECT cell FROM pts GROUP BY cell
-                 ORDER BY COUNT(*) DESC, cell LIMIT 2),
-        ab AS (SELECT MIN(cell) AS a_cell, MAX(cell) AS b_cell FROM top2),
-        span AS (SELECT MIN(hr) AS h0, MAX(hr) AS h1 FROM pts),
-        grid AS (SELECT unnest(generate_series(h0, h1)) AS hr FROM span),
-        cnts AS (SELECT cell, hr, CAST(COUNT(*) AS BIGINT) AS c
-                 FROM pts WHERE cell IN (SELECT cell FROM top2)
-                 GROUP BY 1, 2),
-        xa AS (SELECT g.hr, COALESCE(c.c, 0) AS xa
-               FROM grid g LEFT JOIN cnts c
-                 ON c.hr = g.hr AND c.cell = (SELECT a_cell FROM ab)),
-        xb AS (SELECT g.hr AS hrb, COALESCE(c.c, 0) AS xb
-               FROM grid g LEFT JOIN cnts c
-                 ON c.hr = g.hr AND c.cell = (SELECT b_cell FROM ab)),
-        j AS (SELECT l.lag, xa.xa, xb.xb
-              FROM xa CROSS JOIN (SELECT unnest(generate_series(
-                       -{_XC_MAX_LAG}, {_XC_MAX_LAG})) AS lag) l
-              JOIN xb ON xa.hr + l.lag = xb.hrb),
-        s AS (SELECT lag, CAST(COUNT(*) AS BIGINT) AS n,
-                     SUM(xa) AS sx, SUM(xb) AS sy,
-                     SUM(xa * xa) AS sxx, SUM(xb * xb) AS syy,
-                     SUM(xa * xb) AS sxy
-              FROM j GROUP BY 1)
-        SELECT lag, n AS n_hours,
-               ROUND((n * sxy - sx * sy)
-                     / SQRT(CAST(n * sxx - sx * sx AS DOUBLE)
-                            * CAST(n * syy - sy * sy AS DOUBLE)), 6) AS xcorr
-        FROM s ORDER BY lag
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 7: sequence alignment (NW global + SW local), JL random-
-# projection distance-preservation audit
-# ---------------------------------------------------------------------------
-
-_ALIGN_L = 12
-_ALIGN_DOCS = 30
-
-
-def q_align_titles(spark, sf_dir):
-    """Needleman-Wunsch (global) + Smith-Waterman (local) alignment scores
-    between document title prefixes — the DP family member edit-distance
-    joins can't express (SW finds the best-matching SUBSTRING pair;
-    match=2 / mismatch=−1 / gap=−1). The L×L DP unrolls anti-diagonal by
-    anti-diagonal into flat INTEGER codegen Projects (operators/align.py —
-    the dtw_levels technique), so both engines agree exactly with no float
-    protocol. Operands pad to L=12 with side-distinct sentinels ('~' vs
-    '^') so pad positions never match. All-pairs over 30 titles (bounded
-    cohort, the dtw_pairs posture); top-20 by (sw DESC, nw DESC, a, b)."""
-    from raptor_service_spark.operators.align import align_levels, sw_max_expr
-
-    d = (
-        _read(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < _ALIGN_DOCS)
-        .select(
-            "doc_id",
-            F.rpad(F.substring(F.expr(_TITLE_SPARK), 1, _ALIGN_L), _ALIGN_L, "~").alias("sa"),
-            F.rpad(F.substring(F.expr(_TITLE_SPARK), 1, _ALIGN_L), _ALIGN_L, "^").alias("sb"),
-        )
-    )
-    a = d.select(F.col("doc_id").alias("doc_a"), "sa")
-    b = d.select(F.col("doc_id").alias("doc_b"), "sb")
-    out = a.join(F.broadcast(b), F.col("doc_a") < F.col("doc_b"))
-    a_ch = lambda i: f"substring(sa, {i + 1}, 1)"
-    b_ch = lambda j: f"substring(sb, {j + 1}, 1)"
-    for level in align_levels(_ALIGN_L, a_ch, b_ch):
-        out = out.withColumns({name: F.expr(e) for name, e in level})
-    return (
-        out.select(
-            "doc_a",
-            "doc_b",
-            F.col(f"nw_{_ALIGN_L - 1}_{_ALIGN_L - 1}").cast("long").alias("nw"),
-            F.expr(sw_max_expr(_ALIGN_L)).cast("long").alias("sw"),
-        )
-        .orderBy(F.col("sw").desc(), F.col("nw").desc(), "doc_a", "doc_b")
-        .limit(20)
-    )
-
-
-def _align_titles_sql() -> str:
-    from raptor_service_spark.operators.align import align_levels, sw_max_expr
-
-    a_ch = lambda i: f"substring(sa, {i + 1}, 1)"
-    b_ch = lambda j: f"substring(sb, {j + 1}, 1)"
-    levels = align_levels(_ALIGN_L, a_ch, b_ch)
-    ctes, prev = [], "pairs"
-    for k, level in enumerate(levels):
-        cols = ", ".join(f"{e} AS {name}" for name, e in level)
-        ctes.append(f"l{k} AS (SELECT *, {cols} FROM {prev})")
-        prev = f"l{k}"
-    chain = ",\n        ".join(ctes)
-    return f"""
-        WITH d AS (
-            SELECT doc_id,
-                   rpad(substring({_TITLE_SQL}, 1, {_ALIGN_L}), {_ALIGN_L}, '~') AS sa,
-                   rpad(substring({_TITLE_SQL}, 1, {_ALIGN_L}), {_ALIGN_L}, '^') AS sb
-            FROM documents WHERE doc_id < {_ALIGN_DOCS}),
-        pairs AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sa, b.sb
-            FROM d a JOIN d b ON a.doc_id < b.doc_id),
-        {chain}
-        SELECT doc_a, doc_b,
-               CAST(nw_{_ALIGN_L - 1}_{_ALIGN_L - 1} AS BIGINT) AS nw,
-               CAST({sw_max_expr(_ALIGN_L)} AS BIGINT) AS sw
-        FROM {prev}
-        ORDER BY sw DESC, nw DESC, doc_a, doc_b LIMIT 20
-    """
-
-
-_JL_K = 16
-_JL_DIM = 64
-_JL_VECS = 20
-
-
-def _jl_signs(k: int) -> list[int]:
-    """Column k of the deterministic ±1 projection matrix: sign =
-    md5('d|k') hex-prefix parity — one Python source feeds both engines'
-    literals."""
-    import hashlib
-
-    return [
-        1 if int(hashlib.md5(f"{d}|{k}".encode()).hexdigest()[:4], 16) % 2 == 0 else -1
-        for d in range(_JL_DIM)
-    ]
-
-
-def q_jl_projection_audit(spark, sf_dir):
-    """Johnson-Lindenstrauss random-projection audit: embeddings project
-    64→16 dims through a deterministic ±1/√16 sign matrix (sign =
-    md5(d·'|'·k) parity — the same seeded-mechanism discipline as
-    dp_cell_counts), and the audit reports, per sampled pair, the squared-
-    distance ratio ‖p(x)−p(y)‖²/‖x−y‖² — the measured distortion that
-    justifies projection-first ANN prefilters. One posexplode + (dim×k)
-    agg builds projections; distances are array-side codegen. Top-20 most
-    distorted pairs of the 190-pair sample."""
-    e = (
-        _read(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < _JL_VECS)
-        .select("vec_id", "embedding")
-    )
-    # The ±1 sign matrix is a CONSTANT — built once in Python (md5 parity)
-    # and inlined as array literals, so each projection is an ORDERED
-    # array-side fold in both engines (a groupBy SUM reassociates floats:
-    # observed 1-ulp knife edge on the 9-dp rounded projection).
-    full = e.select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("fv")
-    )
-    proj_cols = []
-    for k in range(_JL_K):
-        signs = "array(" + ", ".join(
-            f"cast({s} as double)" for s in _jl_signs(k)
-        ) + ")"
-        proj_cols.append(
-            f"round(aggregate(zip_with(fv, {signs}, "
-            f"(x, s) -> round(x * s, 9)), cast(0.0 as double), "
-            f"(acc, t) -> acc + t) / 4.0, 9)"
-        )
-    t = full.withColumn("pv", F.expr("array(" + ", ".join(proj_cols) + ")"))
-    a = t.select(F.col("vec_id").alias("vec_a"), F.col("fv").alias("fa"), F.col("pv").alias("pa"))
-    b = t.select(F.col("vec_id").alias("vec_b"), F.col("fv").alias("fb"), F.col("pv").alias("pb"))
-    pairs = a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
-    # display via TRUNCATION (floor of the scaled double): the fold gives
-    # bit-identical doubles in both engines, and floor of the same double
-    # is deterministic — ROUND is not on exact 9-dp knife edges (F.round
-    # is BigDecimal shortest-decimal HALF_UP, DuckDB rounds the binary
-    # value; the 9-dp projection grid makes exact .5 boundaries COMMON)
-    d2 = (
-        "floor(aggregate(zip_with({0}, {1}, (x, y) -> (x - y) * (x - y)), "
-        "cast(0.0 as double), (acc, t) -> acc + t) * 1e9) / 1e9"
-    )
-    out = pairs.select(
-        "vec_a",
-        "vec_b",
-        F.expr(d2.format("fa", "fb")).alias("d64"),
-        F.expr(d2.format("pa", "pb")).alias("d16"),
-    ).select(
-        "vec_a",
-        "vec_b",
-        "d64",
-        "d16",
-        (F.floor(F.col("d16") / F.col("d64") * 1e6) / 1e6).alias("ratio"),
-    )
-    return out.orderBy(
-        F.abs(F.col("ratio") - 1.0).desc(), "vec_a", "vec_b"
-    ).limit(20)
-
-
-def _jl_projection_audit_sql() -> str:
-    # list_reduce = guaranteed left-to-right fold, mirroring Spark's
-    # aggregate() element order (unordered sums reassociate floats —
-    # observed 1-ulp divergence on the 9-dp rounded projection)
-    d2 = (
-        "FLOOR(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(generate_series(1, len({0})), "
-        "i -> ({0}[i] - {1}[i]) * ({0}[i] - {1}[i]))), (acc, t) -> acc + t)"
-        " * 1e9) / 1e9"
-    )
-    proj_cols = []
-    for k in range(_JL_K):
-        signs = "[" + ", ".join(
-            f"CAST({s} AS DOUBLE)" for s in _jl_signs(k)
-        ) + "]"
-        proj_cols.append(
-            f"ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(generate_series(1, len(fv)), "
-            f"i -> ROUND(fv[i] * ({signs})[i], 9))), "
-            f"(acc, t) -> acc + t) / 4.0, 9)"
-        )
-    pv = "[" + ", ".join(proj_cols) + "]"
-    return f"""
-        WITH e AS (
-            SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS fv
-            FROM embeddings WHERE vec_id < {_JL_VECS}),
-        t AS (SELECT vec_id, fv, {pv} AS pv FROM e),
-        pairs AS (
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   a.fv AS fa, b.fv AS fb, a.pv AS pa, b.pv AS pb
-            FROM t a JOIN t b ON a.vec_id < b.vec_id),
-        m AS (
-            SELECT vec_a, vec_b,
-                   ROUND({d2.format("fa", "fb")}, 9) AS d64,
-                   ROUND({d2.format("pa", "pb")}, 9) AS d16
-            FROM pairs)
-        SELECT vec_a, vec_b, d64, d16,
-               FLOOR(d16 / d64 * 1e6) / 1e6 AS ratio
-        FROM m ORDER BY ABS(FLOOR(d16 / d64 * 1e6) / 1e6 - 1.0) DESC,
-                 vec_a, vec_b
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 8: spherical centroid (circular statistics), mobility
-# entropy rate (predictability)
-# ---------------------------------------------------------------------------
-
-
-def q_spherical_centroid(spark, sf_dir):
-    """Spherical mean + resultant length per res-2 tile — the CORRECT
-    centroid on a sphere (arithmetic lat/lng means break across the
-    antimeridian; the 3D unit-vector mean doesn't): R̄ near 1 = tight
-    cluster, near 0 = dispersed (circular-statistics concentration).
-    One point agg to (cells × 3 sums); per-point vector terms pre-round
-    9 dp, outputs 6 dp (the crosstrack trig discipline). Ordered by
-    cell."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    rl, rg = F.radians(lat), F.radians(lng)
-    pts = d.select(
-        cell_encode_col(lat, lng, 2).alias("cell"),
-        F.round(F.cos(rl) * F.cos(rg), 9).alias("ux"),
-        F.round(F.cos(rl) * F.sin(rg), 9).alias("uy"),
-        F.round(F.sin(rl), 9).alias("uz"),
-    )
-    s = pts.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg("ux").alias("mx"),
-        F.avg("uy").alias("my"),
-        F.avg("uz").alias("mz"),
-    )
-    rbar = F.sqrt(
-        F.col("mx") * F.col("mx") + F.col("my") * F.col("my") + F.col("mz") * F.col("mz")
-    )
-    return s.select(
-        "cell",
-        "n_docs",
-        F.round(
-            F.degrees(F.atan2(F.col("mz"), F.sqrt(F.col("mx") * F.col("mx") + F.col("my") * F.col("my")))),
-            6,
-        ).alias("clat"),
-        F.round(F.degrees(F.atan2(F.col("my"), F.col("mx"))), 6).alias("clng"),
-        F.round(rbar, 6).alias("rbar"),
-    ).orderBy("cell")
-
-
-def _spherical_centroid_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    return f"""
-        WITH pts AS (
-            SELECT {cell_encode_sql(lat, lng, 2)} AS cell,
-                   ROUND(COS(RADIANS({lat})) * COS(RADIANS({lng})), 9) AS ux,
-                   ROUND(COS(RADIANS({lat})) * SIN(RADIANS({lng})), 9) AS uy,
-                   ROUND(SIN(RADIANS({lat})), 9) AS uz
-            FROM documents),
-        s AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_docs,
-                     AVG(ux) AS mx, AVG(uy) AS my, AVG(uz) AS mz
-              FROM pts GROUP BY 1)
-        SELECT cell, n_docs,
-               ROUND(DEGREES(ATAN2(mz, SQRT(mx * mx + my * my))), 6) AS clat,
-               ROUND(DEGREES(ATAN2(my, mx)), 6) AS clng,
-               ROUND(SQRT(mx * mx + my * my + mz * mz), 6) AS rbar
-        FROM s ORDER BY cell
-    """
-
-
-_ENT_MIN_MOVES = 20
-
-
-def q_mobility_entropy_rate(spark, sf_dir):
-    """Per-user mobility predictability: the plug-in entropy RATE of the
-    first-order cell-transition chain, −Σ_ij (c_ij/total)·ln(c_ij/total_i)
-    (Song et al.'s predictability-bound ingredient) — low rate = routine
-    mover, high = erratic. Users with ≥ 20 transitions; the 20 most
-    predictable. Everything runs on the aggregated per-user transition
-    counts (exact integer divisions; 9-dp term pre-rounds)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 4))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tr = (
-        pts.withColumn("prev", F.lag("cell").over(w))
-        .filter(F.col("prev").isNotNull())
-        .groupBy("user_id", F.col("prev").alias("src"), F.col("cell").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    row_tot = tr.groupBy("user_id", "src").agg(F.sum("c").alias("tot_i"))
-    usr_tot = tr.groupBy("user_id").agg(F.sum("c").alias("tot"))
-    terms = (
-        tr.join(row_tot, ["user_id", "src"])
-        .join(usr_tot, "user_id")
-        .withColumn(
-            "t",
-            F.round(
-                -(F.col("c") / F.col("tot"))
-                * F.log(F.col("c") / F.col("tot_i")),
-                9,
-            ),
-        )
-    )
-    out = (
-        terms.groupBy("user_id")
-        .agg(
-            F.max("tot").alias("n_moves"),
-            F.round(F.sum("t"), 6).alias("entropy_rate"),
-        )
-        .filter(F.col("n_moves") >= _ENT_MIN_MOVES)
-    )
-    return out.orderBy(F.col("entropy_rate").asc(), "user_id").limit(20)
-
-
-def _mobility_entropy_rate_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH pts AS (
-            SELECT user_id, ts, event_id, {cell} AS cell FROM events),
-        tr AS (
-            SELECT user_id, prev AS src, cell AS dst,
-                   CAST(COUNT(*) AS BIGINT) AS c
-            FROM (SELECT user_id, cell,
-                         LAG(cell) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS prev
-                  FROM pts)
-            WHERE prev IS NOT NULL GROUP BY 1, 2, 3),
-        row_tot AS (SELECT user_id, src, CAST(SUM(c) AS BIGINT) AS tot_i
-                    FROM tr GROUP BY 1, 2),
-        usr_tot AS (SELECT user_id, CAST(SUM(c) AS BIGINT) AS tot
-                    FROM tr GROUP BY 1),
-        terms AS (
-            SELECT tr.user_id, u.tot,
-                   ROUND(-(CAST(tr.c AS DOUBLE) / u.tot)
-                         * LN(CAST(tr.c AS DOUBLE) / r.tot_i), 9) AS t
-            FROM tr JOIN row_tot r USING (user_id, src)
-            JOIN usr_tot u USING (user_id))
-        SELECT user_id, CAST(MAX(tot) AS BIGINT) AS n_moves,
-               ROUND(SUM(t), 6) AS entropy_rate
-        FROM terms GROUP BY user_id
-        HAVING MAX(tot) >= {_ENT_MIN_MOVES}
-        ORDER BY entropy_rate ASC, user_id LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 9: term burstiness (Church-Gale), colocation participation
-# index (Shekhar)
-# ---------------------------------------------------------------------------
-
-_BURST_MIN_DF = 50
-
-
-def q_term_burstiness(spark, sf_dir):
-    """Term burstiness (Church & Gale): mean occurrences per CONTAINING
-    document (cf/df) against the Poisson expectation λ/(1−e^−λ) — terms
-    whose ratio is far above 1 clump into few documents (content words);
-    ratio ≈ 1 means Poisson scatter (function words). The
-    corpus-linguistics screen a curation pipeline uses to find template
-    artifacts. Two aggs over the token stream; the Poisson term is scalar
-    math on aggregated counts. Top-20 by ratio among df ≥ 50 terms."""
-    from raptor_service_spark.operators.dedup import words_col
-
-    d = _read(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(words_col(F.col("text"))).alias("term"))
-    stats = toks.groupBy("term").agg(
-        F.count(F.lit(1)).alias("cf"), F.count_distinct("doc_id").alias("df")
-    )
-    n = F.broadcast(d.agg(F.count(F.lit(1)).alias("n_docs")))
-    lam = F.col("cf") / F.col("n_docs")
-    poisson_mean = lam / (F.lit(1.0) - F.exp(-lam))
-    out = (
-        stats.filter(F.col("df") >= _BURST_MIN_DF)
-        .crossJoin(n)
-        .select(
-            "term",
-            "cf",
-            "df",
-            F.round(F.col("cf") / F.col("df"), 6).alias("burstiness"),
-            F.round((F.col("cf") / F.col("df")) / poisson_mean, 6).alias(
-                "poisson_ratio"
-            ),
-        )
-    )
-    return out.orderBy(F.col("poisson_ratio").desc(), "term").limit(20)
-
-
-def _term_burstiness_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    return f"""
-        WITH toks AS (SELECT doc_id, unnest({w}) AS term FROM documents),
-        stats AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS cf,
-                         CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-                  FROM toks GROUP BY 1),
-        n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents)
-        SELECT term, cf, df,
-               ROUND(CAST(cf AS DOUBLE) / df, 6) AS burstiness,
-               ROUND((CAST(cf AS DOUBLE) / df)
-                     / ((CAST(cf AS DOUBLE) / n_docs)
-                        / (1.0 - EXP(-(CAST(cf AS DOUBLE) / n_docs)))), 6)
-                   AS poisson_ratio
-        FROM stats CROSS JOIN n
-        WHERE df >= {_BURST_MIN_DF}
-        ORDER BY poisson_ratio DESC, term LIMIT 20
-    """
-
-
-_COLOC_EPS = 10.0
-
-
-def q_participation_index(spark, sf_dir):
-    """Colocation participation index (Shekhar & Huang): for every lang
-    pair, the fraction of each side's docs having an ε-neighbor of the
-    other lang; PI = min of the two fractions — the standard colocation-
-    pattern-mining interest measure (vs the ratio-based colocation
-    quotient already covered). Neighbor pairs come from the one-shuffle
-    ε cell/ring join; everything after runs on (docs × langs)-bounded
-    distinct pairs. Exact count ratios — no float hazard."""
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "lang")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng)
-    pr = within_distance_join(pts, pts, eps=_COLOC_EPS).filter(
-        F.col("l.doc_id") != F.col("r.doc_id")
-    )
-    nbr = pr.select(
-        F.col("l.doc_id").alias("a"),
-        F.col("l.lang").alias("la"),
-        F.col("r.lang").alias("lb"),
-    ).distinct()
-    tot = d.groupBy(F.col("lang").alias("la")).agg(
-        F.count(F.lit(1)).alias("n_a")
-    )
-    part = nbr.groupBy("la", "lb").agg(F.count_distinct("a").alias("n_part"))
-    pr_tbl = part.join(tot, "la").select(
-        "la", "lb", "n_part", "n_a",
-        F.round(F.col("n_part") / F.col("n_a"), 6).alias("pr_ab"),
-    )
-    rev = pr_tbl.select(
-        F.col("lb").alias("la"), F.col("la").alias("lb"),
-        F.col("pr_ab").alias("pr_ba"),
-    )
-    out = (
-        pr_tbl.join(rev, ["la", "lb"])
-        .filter(F.col("la") < F.col("lb"))
-        .select(
-            F.col("la").alias("lang_a"),
-            F.col("lb").alias("lang_b"),
-            "pr_ab",
-            "pr_ba",
-            F.least("pr_ab", "pr_ba").alias("pi"),
-        )
-    )
-    return out.orderBy("lang_a", "lang_b")
-
-
-def _participation_index_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    return f"""
-        WITH p AS (SELECT doc_id, lang, {lat} AS lat, {lng} AS lng
-                   FROM documents),
-        nbr AS (
-            SELECT DISTINCT a.doc_id AS a, a.lang AS la, b.lang AS lb
-            FROM p a JOIN p b
-              ON a.doc_id != b.doc_id
-             AND ROUND(SQRT((a.lat - b.lat) * (a.lat - b.lat)
-                            + (a.lng - b.lng) * (a.lng - b.lng)), 6)
-                 <= {_COLOC_EPS!r}),
-        tot AS (SELECT lang AS la, CAST(COUNT(*) AS BIGINT) AS n_a
-                FROM documents GROUP BY 1),
-        part AS (SELECT la, lb, CAST(COUNT(DISTINCT a) AS BIGINT) AS n_part
-                 FROM nbr GROUP BY 1, 2),
-        pr_tbl AS (
-            SELECT part.la, part.lb, part.n_part, tot.n_a,
-                   ROUND(CAST(part.n_part AS DOUBLE) / tot.n_a, 6) AS pr_ab
-            FROM part JOIN tot USING (la))
-        SELECT p1.la AS lang_a, p1.lb AS lang_b, p1.pr_ab,
-               p2.pr_ab AS pr_ba, LEAST(p1.pr_ab, p2.pr_ab) AS pi
-        FROM pr_tbl p1 JOIN pr_tbl p2 ON p1.la = p2.lb AND p1.lb = p2.la
-        WHERE p1.la < p1.lb
-        ORDER BY lang_a, lang_b
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 10: greedy set cover (coverage-max selection), segregation
-# indices, ε-percolation curve
-# ---------------------------------------------------------------------------
-
-_SC_ROUNDS, _SC_POOL = 5, 100
-
-
-def q_greedy_set_cover(spark, sf_dir):
-    """Greedy maximum-coverage selection (the 1−1/e-approximate classic):
-    pick 5 documents that together cover the most distinct vocabulary —
-    the coverage-maximizing subset selection used for summary/eval-set
-    picking in curation. Each round is ONE anti-join + agg over the
-    aggregated (doc, term) table, argmax collected to the driver (O(1)
-    rows, the kmeans-literals protocol), ties to the smaller doc_id.
-    Output (round, doc_id, gain, covered_total)."""
-    from raptor_service_spark.operators.dedup import words_col
-
-    d = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < _SC_POOL)
-    terms = (
-        d.select("doc_id", F.explode(words_col(F.col("text"))).alias("term"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    covered = None
-    rows, total = [], 0
-    for rnd in range(1, _SC_ROUNDS + 1):
-        cand = terms if covered is None else terms.join(covered, "term", "left_anti")
-        top = (
-            cand.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("gain"))
-            .orderBy(F.col("gain").desc(), "doc_id")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        pick, gain = top[0]["doc_id"], top[0]["gain"]
-        total += gain
-        rows.append((rnd, int(pick), int(gain), int(total)))
-        sel_terms = terms.filter(F.col("doc_id") == pick).select("term")
-        covered = (
-            sel_terms
-            if covered is None
-            else covered.unionByName(sel_terms).distinct()
-        ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        rows, "round int, doc_id long, gain long, covered_total long"
-    ).orderBy("round")
-
-
-def _greedy_set_cover_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    steps = [
-        "c0(term) AS MATERIALIZED (SELECT term FROM terms WHERE 1 = 0)"
-    ]
-    picks = []
-    for r in range(1, _SC_ROUNDS + 1):
-        steps.append(
-            f"""p{r} AS MATERIALIZED (
-            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS gain
-            FROM terms t WHERE NOT EXISTS (
-                SELECT 1 FROM c{r - 1} c WHERE c.term = t.term)
-            GROUP BY doc_id ORDER BY gain DESC, doc_id LIMIT 1
-        ),
-        c{r} AS MATERIALIZED (
-            SELECT term FROM c{r - 1}
-            UNION
-            SELECT term FROM terms WHERE doc_id = (SELECT doc_id FROM p{r})
-        )"""
-        )
-        picks.append(
-            f"SELECT {r} AS round, doc_id, gain FROM p{r}"
-        )
-    chain = ",\n        ".join(steps)
-    un = "\n            UNION ALL\n            ".join(picks)
-    return f"""
-        WITH terms AS MATERIALIZED (
-            SELECT DISTINCT doc_id, term FROM (
-                SELECT doc_id, unnest({w}) AS term
-                FROM documents WHERE doc_id < {_SC_POOL})),
-        {chain},
-        sel AS ({un})
-        SELECT CAST(round AS INTEGER) AS round, doc_id, gain,
-               CAST(SUM(gain) OVER (ORDER BY round) AS BIGINT)
-                   AS covered_total
-        FROM sel ORDER BY round
-    """
-
-
-def q_segregation_indices(spark, sf_dir):
-    """Duncan & Duncan segregation profile per language over res-3 tiles:
-    dissimilarity D = ½Σ|l_i/L − o_i/O| (share of the group that would
-    have to move for an even spread), isolation P* = Σ(l_i/L)(l_i/t_i),
-    exposure = Σ(l_i/L)(o_i/t_i) — the spatial-demography classics, here
-    as corpus-mixing diagnostics. One (cell, lang) agg; all ratios exact
-    integer divisions, 9-dp term pre-rounds."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "lang")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("cell", cell_encode_col(lat, lng, 3))
-    cl = pts.groupBy("cell", "lang").agg(F.count(F.lit(1)).alias("c"))
-    ct = cl.groupBy("cell").agg(F.sum("c").alias("t"))
-    langs = d.groupBy("lang").agg(F.count(F.lit(1)).alias("l_tot"))
-    tot = d.agg(F.count(F.lit(1)).alias("n"))
-    grid = (
-        ct.crossJoin(F.broadcast(langs))
-        .join(cl, ["cell", "lang"], "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "lang",
-            "l_tot",
-            F.coalesce("c", F.lit(0)).alias("l_i"),
-            (F.col("t") - F.coalesce("c", F.lit(0))).alias("o_i"),
-            "t",
-            (F.col("n") - F.col("l_tot")).alias("o_tot"),
-        )
-    )
-    out = grid.groupBy("lang", "l_tot").agg(
-        F.round(
-            F.lit(0.5)
-            * F.sum(
-                F.round(
-                    F.abs(
-                        F.col("l_i") / F.col("l_tot")
-                        - F.col("o_i") / F.col("o_tot")
-                    ),
-                    9,
-                )
-            ),
-            6,
-        ).alias("dissimilarity"),
-        F.round(
-            F.sum(
-                F.round(
-                    (F.col("l_i") / F.col("l_tot")) * (F.col("l_i") / F.col("t")), 9
-                )
-            ),
-            6,
-        ).alias("isolation"),
-        F.round(
-            F.sum(
-                F.round(
-                    (F.col("l_i") / F.col("l_tot")) * (F.col("o_i") / F.col("t")), 9
-                )
-            ),
-            6,
-        ).alias("exposure"),
-    )
-    return out.select(
-        "lang", F.col("l_tot").alias("n_docs"), "dissimilarity", "isolation", "exposure"
-    ).orderBy("lang")
-
-
-def _segregation_indices_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH pts AS (SELECT {cell} AS cell, lang FROM documents),
-        cl AS (SELECT cell, lang, CAST(COUNT(*) AS BIGINT) AS c
-               FROM pts GROUP BY 1, 2),
-        ct AS (SELECT cell, CAST(SUM(c) AS BIGINT) AS t FROM cl GROUP BY 1),
-        langs AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS l_tot
-                  FROM documents GROUP BY 1),
-        tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-        grid AS (
-            SELECT langs.lang, langs.l_tot,
-                   COALESCE(cl.c, 0) AS l_i,
-                   ct.t - COALESCE(cl.c, 0) AS o_i,
-                   ct.t, tot.n - langs.l_tot AS o_tot
-            FROM ct CROSS JOIN langs CROSS JOIN tot
-            LEFT JOIN cl ON cl.cell = ct.cell AND cl.lang = langs.lang)
-        SELECT lang, l_tot AS n_docs,
-               ROUND(0.5 * SUM(ROUND(ABS(CAST(l_i AS DOUBLE) / l_tot
-                                         - CAST(o_i AS DOUBLE) / o_tot), 9)),
-                     6) AS dissimilarity,
-               ROUND(SUM(ROUND((CAST(l_i AS DOUBLE) / l_tot)
-                               * (CAST(l_i AS DOUBLE) / t), 9)), 6)
-                   AS isolation,
-               ROUND(SUM(ROUND((CAST(l_i AS DOUBLE) / l_tot)
-                               * (CAST(o_i AS DOUBLE) / t), 9)), 6)
-                   AS exposure
-        FROM grid GROUP BY 1, 2 ORDER BY lang
-    """
-
-
-_PERC_EPS = [6.0, 10.0, 14.0]
-_PERC_POOL = 3000
-
-
-def q_percolation_curve(spark, sf_dir):
-    """ε-percolation curve of the document point set: at each radius, the
-    number of connected components of the ε-graph and the giant-component
-    fraction — WHERE the corpus's spatial graph snaps together (the
-    threshold picker for geo_clusters/geo_dbscan radii). Per ε: one
-    cell/ring ε-join (each pair once) + the large/small-star components
-    loop; everything else is O(nodes). Bounded doc pool (the dtw cohort
-    posture)."""
-    from raptor_service_spark.operators.dedup import dedup_components
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    d = _read(spark, sf_dir, "documents").filter(F.col("doc_id") < _PERC_POOL).select(
-        "doc_id"
-    )
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.withColumn("lat", lat).withColumn("lng", lng).localCheckpoint(eager=True)
-    n_nodes = pts.count()
-    # ONE ε-join at the largest radius; smaller radii are dist-filters of
-    # it (within_distance_join keeps the rounded dist and its ring cover
-    # at eps_max is a superset of every smaller ε's) — 3 joins → 1.
-    all_pairs = (
-        within_distance_join(pts, pts, eps=max(_PERC_EPS))
-        .filter(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            "dist",
-        )
-        .localCheckpoint(eager=True)
-    )
-    # The three ε component loops are independent driver-stepped iterations
-    # (each star round is a small job + eager checkpoint — latency-bound,
-    # not throughput-bound at this pool size), so run them on concurrent
-    # driver threads: the Spark scheduler interleaves their jobs and the
-    # wall cost becomes ~max instead of sum. On a real cluster the same
-    # overlap hides per-round scheduling latency across executors.
-    def _one_eps(eps):
-        pairs = all_pairs.filter(F.col("dist") <= eps).select("doc_a", "doc_b")
-        comp = dedup_components(pairs)
-        full = pts.select(F.col("doc_id").alias("id")).join(
-            comp, "id", "left"
-        ).select(F.coalesce("comp", "id").alias("comp"))
-        sizes = full.groupBy("comp").agg(F.count(F.lit(1)).alias("sz"))
-        return sizes.agg(
-            F.lit(eps).alias("eps"),
-            F.lit(n_nodes).cast("long").alias("n_nodes"),
-            F.count(F.lit(1)).alias("n_components"),
-            F.round(F.max("sz") / F.lit(float(n_nodes)), 6).alias("giant_frac"),
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(_PERC_EPS)) as ex:
-        outs = list(ex.map(_one_eps, _PERC_EPS))
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("eps")
-
-
-def _percolation_curve_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    blocks = []
-    for eps in _PERC_EPS:
-        blocks.append(
-            f"""
-        SELECT CAST({eps!r} AS DOUBLE) AS eps,
-               (SELECT COUNT(*) FROM p) AS n_nodes,
-               CAST(COUNT(*) AS BIGINT) AS n_components,
-               ROUND(MAX(sz) / CAST((SELECT COUNT(*) FROM p) AS DOUBLE), 6)
-                   AS giant_frac
-        FROM (
-            WITH RECURSIVE pr AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM p a JOIN p b ON a.doc_id < b.doc_id
-                WHERE ROUND(SQRT((a.lat - b.lat) * (a.lat - b.lat)
-                                 + (a.lng - b.lng) * (a.lng - b.lng)), 6)
-                      <= {eps!r}),
-            edges AS (SELECT doc_a AS src, doc_b AS dst FROM pr
-                      UNION SELECT doc_b, doc_a FROM pr),
-            reach(id, r) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.src, reach.r FROM edges e
-                JOIN reach ON e.dst = reach.id),
-            comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY id),
-            lab AS (SELECT p.doc_id, COALESCE(c.comp, p.doc_id) AS comp
-                    FROM p LEFT JOIN comp c ON p.doc_id = c.id)
-            SELECT comp, CAST(COUNT(*) AS BIGINT) AS sz
-            FROM lab GROUP BY comp)"""
-        )
-    union = "\n        UNION ALL\n        ".join(blocks)
-    return f"""
-        WITH p AS (SELECT doc_id, {lat} AS lat, {lng} AS lng
-                   FROM documents WHERE doc_id < {_PERC_POOL})
-        SELECT * FROM ({union}) ORDER BY eps
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 11: STL-lite seasonal decomposition, binary-segmentation
-# change point, deterministic RANSAC line fit
-# ---------------------------------------------------------------------------
-
-
-def q_stl_lite(spark, sf_dir):
-    """Seasonal-trend decomposition (moving-average STL-lite) of the
-    global hourly event series: trend = centered 25-hour MA (only where
-    the full window exists), seasonal profile = per hour-of-day mean of
-    the detrended series, remainder = x − trend − seasonal. Output: the
-    24-row seasonal profile + mean |remainder| per hod — the load-shape
-    summary capacity planning reads. Dense hour grid (missing hours = 0);
-    ONE agg + two windows + one agg, all on the O(hours) series."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hr = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(3_600_000_000)
-    ).cast("long")
-    cnt = ev.select(hr.alias("hr")).groupBy("hr").agg(F.count(F.lit(1)).alias("n"))
-    span = cnt.agg(F.min("hr").alias("h0"), F.max("hr").alias("h1"))
-    grid = span.select(F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("hr"))
-    x = grid.join(cnt, "hr", "left").select(
-        "hr", F.coalesce("n", F.lit(0)).cast("double").alias("x")
-    )
-    w = Window.orderBy("hr").rowsBetween(-12, 12)
-    t = x.withColumn("n_win", F.count(F.lit(1)).over(w)).withColumn(
-        "trend", F.round(F.avg("x").over(w), 9)
-    )
-    det = t.filter(F.col("n_win") == 25).select(
-        F.pmod(F.col("hr"), F.lit(24)).alias("hod"),
-        "hr",
-        "x",
-        (F.col("x") - F.col("trend")).alias("d"),
-    )
-    seas = det.groupBy("hod").agg(
-        F.count(F.lit(1)).alias("n_obs"), F.round(F.avg("d"), 9).alias("s")
-    )
-    rem = det.join(seas.select("hod", "s"), "hod").select(
-        "hod", F.abs(F.col("d") - F.col("s")).alias("ar")
-    )
-    out = (
-        seas.join(
-            rem.groupBy("hod").agg(F.round(F.avg("ar"), 6).alias("mean_abs_rem")),
-            "hod",
-        )
-        .select("hod", "n_obs", F.round("s", 6).alias("seasonal"), "mean_abs_rem")
-    )
-    return out.orderBy("hod")
-
-
-def _stl_lite_sql() -> str:
-    return """
-        WITH cnt AS (
-            SELECT CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) AS hr,
-                   CAST(COUNT(*) AS BIGINT) AS n
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(hr) AS h0, MAX(hr) AS h1 FROM cnt),
-        grid AS (SELECT unnest(generate_series(h0, h1)) AS hr FROM span),
-        x AS (SELECT g.hr, CAST(COALESCE(c.n, 0) AS DOUBLE) AS x
-              FROM grid g LEFT JOIN cnt c USING (hr)),
-        t AS (SELECT hr, x,
-                     COUNT(*) OVER wnd AS n_win,
-                     ROUND(AVG(x) OVER wnd, 9) AS trend
-              FROM x WINDOW wnd AS (ORDER BY hr
-                                    ROWS BETWEEN 12 PRECEDING
-                                             AND 12 FOLLOWING)),
-        det AS (SELECT hr % 24 AS hod, hr, x, x - trend AS d
-                FROM t WHERE n_win = 25),
-        seas AS (SELECT hod, CAST(COUNT(*) AS BIGINT) AS n_obs,
-                        ROUND(AVG(d), 9) AS s
-                 FROM det GROUP BY 1),
-        rem AS (SELECT det.hod, ABS(det.d - seas.s) AS ar
-                FROM det JOIN seas USING (hod))
-        SELECT seas.hod, seas.n_obs, ROUND(seas.s, 6) AS seasonal,
-               r.mean_abs_rem
-        FROM seas JOIN (SELECT hod, ROUND(AVG(ar), 6) AS mean_abs_rem
-                        FROM rem GROUP BY 1) r USING (hod)
-        ORDER BY hod
-    """
-
-
-_CP_MARGIN = 24
-
-
-def q_changepoint_detect(spark, sf_dir):
-    """Binary-segmentation change point on the global hourly event series:
-    the split minimizing two-segment SSE (equivalently maximizing the
-    between-segment variance drop) with a 24-hour edge margin — the
-    offline twin of the CUSUM screen. Prefix sums via ONE cumulative
-    window make every candidate split O(1); all sums exact integers until
-    the final divisions. Output one row: split hour, segment means, SSE
-    drop."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hr = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(3_600_000_000)
-    ).cast("long")
-    cnt = ev.select(hr.alias("hr")).groupBy("hr").agg(F.count(F.lit(1)).alias("n"))
-    span = cnt.agg(F.min("hr").alias("h0"), F.max("hr").alias("h1"))
-    grid = span.select(F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("hr"))
-    x = grid.join(cnt, "hr", "left").select(
-        "hr", F.coalesce("n", F.lit(0)).alias("n")
-    )
-    w = Window.orderBy("hr").rowsBetween(Window.unboundedPreceding, 0)
-    pre = x.select(
-        "hr",
-        F.row_number().over(Window.orderBy("hr")).alias("t"),
-        F.sum("n").over(w).alias("s1"),
-        F.sum(F.col("n") * F.col("n")).over(w).alias("s2"),
-    )
-    tot = pre.agg(
-        F.max("t").alias("tn"), F.max("s1").alias("ts1"), F.max("s2").alias("ts2")
-    )
-    cand = pre.crossJoin(F.broadcast(tot)).filter(
-        (F.col("t") >= _CP_MARGIN) & (F.col("t") <= F.col("tn") - _CP_MARGIN)
-    )
-    sse = (
-        F.col("ts2")
-        - F.col("s1") * F.col("s1") / F.col("t")
-        - (F.col("ts1") - F.col("s1"))
-        * (F.col("ts1") - F.col("s1"))
-        / (F.col("tn") - F.col("t"))
-    )
-    sse_full = F.col("ts2") - F.col("ts1") * F.col("ts1") / F.col("tn")
-    scored = cand.select(
-        "hr",
-        "t",
-        "tn",
-        F.round(sse, 9).alias("sse_split"),
-        F.round(sse_full, 9).alias("sse_full"),
-        F.round(F.col("s1") / F.col("t"), 6).alias("mean_before"),
-        F.round(
-            (F.col("ts1") - F.col("s1")) / (F.col("tn") - F.col("t")), 6
-        ).alias("mean_after"),
-    )
-    return (
-        scored.orderBy(F.col("sse_split").asc(), F.col("hr").asc())
-        .limit(1)
-        .select(
-            F.col("hr").alias("split_hr"),
-            F.col("tn").cast("long").alias("n_hours"),
-            "mean_before",
-            "mean_after",
-            "sse_full",
-            "sse_split",
-            F.round(F.col("sse_full") - F.col("sse_split"), 6).alias("sse_drop"),
-        )
-    )
-
-
-def _changepoint_detect_sql() -> str:
-    return f"""
-        WITH cnt AS (
-            SELECT CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) AS hr,
-                   CAST(COUNT(*) AS BIGINT) AS n
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(hr) AS h0, MAX(hr) AS h1 FROM cnt),
-        grid AS (SELECT unnest(generate_series(h0, h1)) AS hr FROM span),
-        x AS (SELECT g.hr, COALESCE(c.n, 0) AS n
-              FROM grid g LEFT JOIN cnt c USING (hr)),
-        pre AS (SELECT hr,
-                       ROW_NUMBER() OVER (ORDER BY hr) AS t,
-                       SUM(n) OVER (ORDER BY hr) AS s1,
-                       SUM(n * n) OVER (ORDER BY hr) AS s2
-                FROM x),
-        tot AS (SELECT MAX(t) AS tn, MAX(s1) AS ts1, MAX(s2) AS ts2 FROM pre),
-        scored AS (
-            SELECT hr, t, tn,
-                   ROUND(ts2 - CAST(s1 * s1 AS DOUBLE) / t
-                         - CAST((ts1 - s1) * (ts1 - s1) AS DOUBLE)
-                           / (tn - t), 9) AS sse_split,
-                   ROUND(ts2 - CAST(ts1 * ts1 AS DOUBLE) / tn, 9) AS sse_full,
-                   ROUND(CAST(s1 AS DOUBLE) / t, 6) AS mean_before,
-                   ROUND(CAST(ts1 - s1 AS DOUBLE) / (tn - t), 6) AS mean_after
-            FROM pre CROSS JOIN tot
-            WHERE t >= {_CP_MARGIN} AND t <= tn - {_CP_MARGIN})
-        SELECT hr AS split_hr, CAST(tn AS BIGINT) AS n_hours,
-               mean_before, mean_after, sse_full, sse_split,
-               ROUND(sse_full - sse_split, 6) AS sse_drop
-        FROM scored ORDER BY sse_split ASC, hr ASC LIMIT 1
-    """
-
-
-_RANSAC_K = 20
-_RANSAC_TOL = 40.0
-
-
-def q_ransac_fit(spark, sf_dir):
-    """Deterministic RANSAC line fit of n_chars vs token count per doc:
-    20 candidate lines through md5-rank-paired sample points (seeded
-    mechanism — replays identically, the dp_cell_counts discipline),
-    inliers = |y − (a + b·x)| ≤ 40, winner by (inliers DESC, candidate
-    ASC). The robust-estimation classic next to theil_sen_cells. Scale
-    shape: candidates are O(1) driver rows; scoring is ONE k×n
-    explode-agg over broadcast candidate lines."""
-    from raptor_service_spark.operators.dedup import words_col
-
-    d = _read(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.size(words_col(F.col("text"))).cast("double").alias("x"),
-        F.col("n_chars").cast("double").alias("y"),
-    )
-    ranked = d.withColumn("k", F.md5(F.col("doc_id").cast("string"))).orderBy("k")
-    pts = ranked.limit(2 * _RANSAC_K).collect()
-    cands = []
-    for k in range(_RANSAC_K):
-        p1, p2 = pts[2 * k], pts[2 * k + 1]
-        if p2.x == p1.x:
-            continue
-        b = float(_round_half_up((p2.y - p1.y) / (p2.x - p1.x), 9))
-        a = float(_round_half_up(p1.y - b * p1.x, 9))
-        cands.append((k, a, b))
-    cdf = spark.createDataFrame(cands, "cand int, a double, b double")
-    scored = d.crossJoin(F.broadcast(cdf)).withColumn(
-        "inlier",
-        F.when(
-            F.abs(F.col("y") - (F.col("a") + F.col("b") * F.col("x")))
-            <= _RANSAC_TOL,
-            1,
-        ).otherwise(0),
-    )
-    per = scored.groupBy("cand", "a", "b").agg(
-        F.sum("inlier").alias("n_inliers"), F.count(F.lit(1)).alias("n")
-    )
-    return (
-        per.orderBy(F.col("n_inliers").desc(), F.col("cand").asc())
-        .limit(1)
-        .select(
-            "cand",
-            F.col("b").alias("slope"),
-            F.col("a").alias("intercept"),
-            F.col("n_inliers").cast("long").alias("n_inliers"),
-            F.round(F.col("n_inliers") / F.col("n"), 6).alias("inlier_frac"),
-        )
-    )
-
-
-def _ransac_fit_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    w = words_sql("text")
-    return f"""
-        WITH d AS (
-            SELECT doc_id, CAST(len({w}) AS DOUBLE) AS x,
-                   CAST(n_chars AS DOUBLE) AS y
-            FROM documents),
-        ranked AS (
-            SELECT d.*, ROW_NUMBER() OVER (
-                ORDER BY md5(CAST(doc_id AS VARCHAR))) AS rk
-            FROM d),
-        smp AS (SELECT * FROM ranked WHERE rk <= {2 * _RANSAC_K}),
-        cands AS (
-            SELECT CAST((p1.rk - 1) / 2 AS INTEGER) AS cand,
-                   ROUND(p1.y - ROUND((p2.y - p1.y) / (p2.x - p1.x), 9)
-                         * p1.x, 9) AS a,
-                   ROUND((p2.y - p1.y) / (p2.x - p1.x), 9) AS b
-            FROM smp p1 JOIN smp p2
-              ON p2.rk = p1.rk + 1 AND p1.rk % 2 = 1
-            WHERE p2.x != p1.x),
-        scored AS (
-            SELECT c.cand, c.a, c.b,
-                   CAST(SUM(CASE WHEN ABS(d.y - (c.a + c.b * d.x))
-                                      <= {_RANSAC_TOL!r} THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_inliers,
-                   CAST(COUNT(*) AS BIGINT) AS n
-            FROM d CROSS JOIN cands c GROUP BY 1, 2, 3)
-        SELECT cand, b AS slope, a AS intercept, n_inliers,
-               ROUND(CAST(n_inliers AS DOUBLE) / n, 6) AS inlier_frac
-        FROM scored ORDER BY n_inliers DESC, cand ASC LIMIT 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 12: next-cell prediction eval (temporal split), interleaved
-# span-position layout profile
-# ---------------------------------------------------------------------------
-
-
-def q_next_cell_eval(spark, sf_dir):
-    """Next-cell prediction accuracy with a TEMPORAL train/test split —
-    the eval protocol (never random splits on time series) applied to the
-    first-order mobility model: train the per-cell argmax next-cell table
-    on even days, score it on odd-day transitions; baseline = predicting
-    the globally most common destination. Everything runs on aggregated
-    transition counts; argmax ties break toward the smaller cell id.
-    Output one row: transition counts, model accuracy, baseline accuracy,
-    lift."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 4)).withColumn(
-        "day", F.floor(F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(86_400_000_000))
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tr = (
-        pts.withColumn("prev", F.lag("cell").over(w))
-        .withColumn("prev_day", F.lag("day").over(w))
-        .filter(F.col("prev").isNotNull())
-        .select(
-            F.col("prev").alias("src"),
-            F.col("cell").alias("dst"),
-            # a transition belongs to the day of its ORIGIN fix
-            F.col("prev_day").alias("day"),
-        )
-    )
-    train = tr.filter(F.col("day") % 2 == 0).groupBy("src", "dst").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    wa = Window.partitionBy("src").orderBy(F.col("c").desc(), F.col("dst").asc())
-    model = (
-        train.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
-        .select("src", F.col("dst").alias("pred"))
-    )
-    base = (
-        train.groupBy("dst")
-        .agg(F.sum("c").alias("c"))
-        .orderBy(F.col("c").desc(), F.col("dst").asc())
-        .limit(1)
-        .select(F.col("dst").alias("base_pred"))
-    )
-    test = tr.filter(F.col("day") % 2 == 1)
-    scored = test.join(model, "src", "left").crossJoin(F.broadcast(base))
-    return scored.agg(
-        F.count(F.lit(1)).alias("n_test"),
-        F.sum(F.when(F.col("pred") == F.col("dst"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_correct"),
-        F.sum(F.when(F.col("base_pred") == F.col("dst"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_base"),
-    ).select(
-        "n_test",
-        "n_correct",
-        F.round(F.col("n_correct") / F.col("n_test"), 6).alias("accuracy"),
-        F.round(F.col("n_base") / F.col("n_test"), 6).alias("baseline_acc"),
-        # lift from EXACT counts (dividing the rounded rates re-rounds)
-        F.round(F.col("n_correct") / F.col("n_base"), 6).alias("lift"),
-    )
-
-
-def _next_cell_eval_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return """
-        WITH pts AS (
-            SELECT user_id, ts, event_id, {cell} AS cell,
-                   CAST(FLOOR(epoch_us(ts) / 86400000000) AS BIGINT) AS day
-            FROM events),
-        tr AS (
-            SELECT prev AS src, cell AS dst, prev_day AS day
-            FROM (SELECT cell, day,
-                         LAG(cell) OVER wnd AS prev,
-                         LAG(day) OVER wnd AS prev_day
-                  FROM pts WINDOW wnd AS (PARTITION BY user_id
-                                          ORDER BY ts, event_id))
-            WHERE prev IS NOT NULL),
-        train AS (SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS c
-                  FROM tr WHERE day % 2 = 0 GROUP BY 1, 2),
-        model AS (
-            SELECT src, dst AS pred FROM (
-                SELECT src, dst, ROW_NUMBER() OVER (
-                    PARTITION BY src ORDER BY c DESC, dst ASC) AS rn
-                FROM train) WHERE rn = 1),
-        base AS (SELECT dst AS base_pred FROM train
-                 GROUP BY dst ORDER BY SUM(c) DESC, dst ASC LIMIT 1),
-        test AS (SELECT * FROM tr WHERE day % 2 = 1),
-        scored AS (SELECT t.dst, m.pred, b.base_pred
-                   FROM test t LEFT JOIN model m USING (src)
-                   CROSS JOIN base b)
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_test,
-               CAST(SUM(CASE WHEN pred = dst THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_correct,
-               ROUND(CAST(SUM(CASE WHEN pred = dst THEN 1 ELSE 0 END)
-                          AS DOUBLE) / COUNT(*), 6) AS accuracy,
-               ROUND(CAST(SUM(CASE WHEN base_pred = dst THEN 1 ELSE 0 END)
-                          AS DOUBLE) / COUNT(*), 6) AS baseline_acc,
-               ROUND(CAST(SUM(CASE WHEN pred = dst THEN 1 ELSE 0 END)
-                          AS DOUBLE)
-                     / SUM(CASE WHEN base_pred = dst THEN 1 ELSE 0 END), 6)
-                   AS lift
-        FROM scored
-    """.replace("{cell}", cell)
-
-
-_SPP_DOCS, _SPP_SEED = 200, 63
-
-
-def q_span_position_profile(spark, sf_dir):
-    """Layout profile of the interleaved corpus: P(media | position
-    decile) — WHERE media spans sit inside documents (leading figures vs
-    trailing galleries), the structural statistic an interleaved
-    text+image training mix is balanced against. Position = idx/n_spans
-    decile; one explode + one agg. Oracle replays the deterministic
-    generator as golden VALUES (the span_transitions technique)."""
-    from raptor_service_spark.datagen import gen_documents_df
-    from raptor_service_spark.operators.chunking import explode_spans
-
-    docs = gen_documents_df(spark, _SPP_DOCS, seed=_SPP_SEED)
-    sp = explode_spans(docs)
-    n = sp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    dec = sp.join(n, "doc_id").select(
-        F.least(
-            F.lit(9), F.floor(F.col("idx") * 10 / F.col("n")).cast("int")
-        ).alias("decile"),
-        F.when(F.col("media_ref") != "", 1).otherwise(0).alias("is_media"),
-    )
-    return (
-        dec.groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).alias("n_spans"),
-            F.sum("is_media").cast("long").alias("n_media"),
-            F.round(F.avg(F.col("is_media").cast("double")), 6).alias(
-                "media_frac"
-            ),
-        )
-        .orderBy("decile")
-    )
-
-
-def _span_position_profile_sql() -> str:
-    from raptor_service_spark.datagen import _gen_doc
-
-    rows = []
-    for i in range(_SPP_DOCS):
-        d = _gen_doc(_SPP_SEED, i)
-        nn = len(d["spans"])
-        for j, s in enumerate(d["spans"]):
-            rows.append(f"({j}, {nn}, {1 if s['media_ref'] else 0})")
-    return f"""
-        WITH spans(idx, n, is_media) AS (VALUES {', '.join(rows)})
-        SELECT CAST(LEAST(9, FLOOR(idx * 10 / n)) AS INTEGER) AS decile,
-               CAST(COUNT(*) AS BIGINT) AS n_spans,
-               CAST(SUM(is_media) AS BIGINT) AS n_media,
-               ROUND(AVG(CAST(is_media AS DOUBLE)), 6) AS media_frac
-        FROM spans GROUP BY 1 ORDER BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# round-3 batch 13: multi-probe LSH recall audit
-# ---------------------------------------------------------------------------
-
-_MP_PLANES = 8
-
-
-def _lsh_plane(p: int) -> list[int]:
-    """±1 hyperplane p of the cosine-LSH code: md5('lsh{p}|{d}') parity —
-    one Python source feeds both engines (and the Python query-code
-    computation)."""
-    import hashlib
-
-    return [
-        1
-        if int(hashlib.md5(f"lsh{p}|{d}".encode()).hexdigest()[:4], 16) % 2 == 0
-        else -1
-        for d in range(64)
-    ]
-
-
-def _lsh_code_py(v) -> int:
-    code = 0
-    for p in range(_MP_PLANES):
-        s = _lsh_plane(p)
-        if float(np.dot(np.asarray(v, dtype=np.float64), np.asarray(s, dtype=np.float64))) > 0:
-            code |= 1 << p
-    return code
-
-
-def q_multiprobe_lsh_recall(spark, sf_dir):
-    """Multi-probe LSH audit (Lv et al. 2007): recall@10 of cosine
-    hyperplane-LSH candidates against the exact top-10, single-bucket vs
-    multi-probe (all Hamming-1 buckets) — the measurement that justifies
-    probing over building more tables. 8 deterministic ±1 hyperplanes;
-    sign folds are ordered array aggregates (identical doubles both
-    engines; |dot| is O(1) so the >0 sign cannot knife-edge). One scan
-    computes every code; candidates/recall run on flag columns — no
-    pair join anywhere. Two queries × two modes."""
-    e = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fold = (
-        "aggregate(zip_with(transform(embedding, x -> cast(x as double)), "
-        "{0}, (x, s) -> x * s), cast(0.0 as double), (acc, t) -> acc + t)"
-    )
-    code_expr = None
-    for p in range(_MP_PLANES):
-        signs = "array(" + ", ".join(
-            f"cast({s} as double)" for s in _lsh_plane(p)
-        ) + ")"
-        bit = F.when(F.expr(fold.format(signs)) > 0, F.lit(1 << p)).otherwise(
-            F.lit(0)
-        )
-        code_expr = bit if code_expr is None else code_expr + bit
-    coded = e.withColumn("code", code_expr.cast("long")).localCheckpoint(
-        eager=True
-    )
-    outs = []
-    for qid, q in (("qa", QVEC), ("qb", QVEC2)):
-        qc = _lsh_code_py(q)
-        top = (
-            coded.withColumn("dist", F.round(cosine_dist_col(F.col("embedding"), q), 6))
-            .orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-            .limit(10)
-            .select("vec_id", "code")
-        )
-        for mode, pred in (
-            ("single", F.col("code") == qc),
-            ("multiprobe", F.expr(f"bit_count(code ^ {qc})") <= 1),
-        ):
-            n_cand = coded.filter(pred).count()
-            hits = top.filter(pred).count()
-            outs.append((qid, mode, int(n_cand), int(hits), round(hits / 10.0, 6)))
-    return spark.createDataFrame(
-        outs, "qid string, mode string, n_cand long, hits long, recall double"
-    ).orderBy("qid", "mode")
-
-
-def _multiprobe_lsh_recall_sql() -> str:
-    fold = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_transform(generate_series(1, 64), "
-        "i -> fv[i] * ({0})[i])), (acc, t) -> acc + t)"
-    )
-    bits = []
-    for p in range(_MP_PLANES):
-        signs = "[" + ", ".join(
-            f"CAST({s} AS DOUBLE)" for s in _lsh_plane(p)
-        ) + "]"
-        bits.append(
-            f"(CASE WHEN {fold.format(signs)} > 0 THEN {1 << p} ELSE 0 END)"
-        )
-    code = " + ".join(bits)
-    blocks = []
-    for qid, q in (("qa", QVEC), ("qb", QVEC2)):
-        qsql = "[" + ", ".join(f"{x:.6f}" for x in q) + "]"
-        qc = _lsh_code_py(q)
-        top = f"""(SELECT vec_id, code FROM (
-                SELECT vec_id, code,
-                       ROUND(1.0 - list_cosine_similarity(
-                           list_transform(embedding, x -> CAST(x AS DOUBLE)),
-                           {qsql}), 6) AS dist
-                FROM coded)
-            ORDER BY dist ASC, vec_id ASC LIMIT 10)"""
-        for mode, pred in (
-            ("single", f"code = {qc}"),
-            ("multiprobe", f"bit_count(xor(code, {qc}::BIGINT)) <= 1"),
-        ):
-            blocks.append(
-                f"""SELECT '{qid}' AS qid, '{mode}' AS mode,
-                   (SELECT CAST(COUNT(*) AS BIGINT) FROM coded
-                    WHERE {pred}) AS n_cand,
-                   (SELECT CAST(COUNT(*) AS BIGINT) FROM {top} t
-                    WHERE {pred.replace('code', 't.code')}) AS hits,
-                   (SELECT ROUND(COUNT(*) / 10.0, 6) FROM {top} t
-                    WHERE {pred.replace('code', 't.code')}) AS recall"""
-            )
-    union = "\n        UNION ALL\n        ".join(blocks)
-    return f"""
-        WITH e AS (
-            SELECT vec_id, embedding,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS fv
-            FROM embeddings),
-        coded AS MATERIALIZED (
-            SELECT vec_id, embedding, {code} AS code FROM e)
-        SELECT * FROM ({union}) ORDER BY qid, mode
-    """
-
-
-# ---------------------------------------------------------------------------
-# Rayleigh circular-uniformity test over movement directions (session 10)
-# ---------------------------------------------------------------------------
-
-_RAYL_RES, _RAYL_MIN_N, _RAYL_TOPK = 2, 30, 20
-
-
-def q_rayleigh_bearing(spark, sf_dir):
-    """Rayleigh test for directional bias of movement per res-2 tile — the
-    circular-statistics screen behind flow-field maps (is motion in this
-    tile uniformly scattered, or does it share a preferred heading?). Each
-    consecutive same-user event pair is a displacement; its UNIT vector
-    (dx/‖d‖, dy/‖d‖) is the direction sample — the resultant length
-    R̄ = ‖Σ uᵢ‖/n and Rayleigh z = n·R̄² need no trig at all (no libm
-    divergence; SQRT is IEEE-exact in both engines). One lag window + one
-    cell agg; per-term 9-dp pre-rounds per repo convention; display via
-    floor-truncation. Top-20 most-directional tiles with n ≥ 30.
-
-    Reference analog: the retrieval-direction diagnostics of
-    services/retrieval_service.py recast as circular statistics; completes
-    the bearing family (bearing_rose = histogram, spherical_centroid =
-    mean direction, rayleigh = significance)."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = (
-        pts.withColumn("dlat", F.col("lat") - F.lag("lat").over(w))
-        .withColumn("dlng", F.col("lng") - F.lag("lng").over(w))
-        .withColumn("lat0", F.lag("lat").over(w))
-        .withColumn("lng0", F.lag("lng").over(w))
-        .filter(
-            F.col("dlat").isNotNull() & ((F.col("dlat") != 0) | (F.col("dlng") != 0))
-        )
-    )
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ln = F.sqrt(F.col("dlat") * F.col("dlat") + F.col("dlng") * F.col("dlng"))
-    u = seg.select(
-        cell_encode_col(F.col("lat0"), F.col("lng0"), _RAYL_RES).alias("cell"),
-        F.round(F.col("dlng") / ln, 9).alias("ux"),
-        F.round(F.col("dlat") / ln, 9).alias("uy"),
-    )
-    agg = u.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("n_moves"),
-        F.sum("ux").alias("sx"),
-        F.sum("uy").alias("sy"),
-    )
-    r2 = F.col("sx") * F.col("sx") + F.col("sy") * F.col("sy")
-    out = (
-        agg.filter(F.col("n_moves") >= _RAYL_MIN_N)
-        .select(
-            "cell",
-            "n_moves",
-            (F.floor(F.sqrt(r2) / F.col("n_moves") * 1e6) / 1e6).alias("rbar"),
-            # z from the raw sum of squares (NOT sqrt-then-resquare — that
-            # round-trips through a different double)
-            (F.floor(r2 / F.col("n_moves") * 1e6) / 1e6).alias("z"),
-        )
-    )
-    top = Window.orderBy(F.col("z").desc(), "cell")
-    return (
-        out.withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= _RAYL_TOPK)
-        .select("cell", "n_moves", "rbar", "z", "rk")
-    )
-
-
-def _rayleigh_bearing_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql("lat0", "lng0", _RAYL_RES)
-    return f"""
-        WITH p AS (SELECT user_id, ts, event_id, {lat} AS lat, {lng} AS lng
-                   FROM events),
-        s AS (SELECT user_id,
-                     lat - LAG(lat) OVER w AS dlat,
-                     lng - LAG(lng) OVER w AS dlng,
-                     LAG(lat) OVER w AS lat0,
-                     LAG(lng) OVER w AS lng0
-              FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        u AS (SELECT {cell} AS cell,
-                     ROUND(dlng / SQRT(dlat * dlat + dlng * dlng), 9) AS ux,
-                     ROUND(dlat / SQRT(dlat * dlat + dlng * dlng), 9) AS uy
-              FROM s
-              WHERE dlat IS NOT NULL AND (dlat != 0 OR dlng != 0)),
-        a AS (SELECT cell, COUNT(*) AS n_moves,
-                     SUM(ux) AS sx, SUM(uy) AS sy
-              FROM u GROUP BY 1),
-        sc AS (SELECT cell, n_moves,
-                      FLOOR(SQRT(sx * sx + sy * sy) / n_moves * 1e6) / 1e6
-                          AS rbar,
-                      FLOOR((sx * sx + sy * sy) / n_moves * 1e6) / 1e6 AS z
-               FROM a WHERE n_moves >= {_RAYL_MIN_N})
-        SELECT cell, n_moves, rbar, z, rk FROM (
-            SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY z DESC, cell) AS BIGINT)
-                          AS rk
-            FROM sc)
-        WHERE rk <= {_RAYL_TOPK}
-    """
-
-
-# ---------------------------------------------------------------------------
-# deterministic bootstrap confidence interval (session 10)
-# ---------------------------------------------------------------------------
-
-_BOOT_B, _BOOT_POOL = 200, 2000
-
-
-def q_bootstrap_ci(spark, sf_dir):
-    """Nonparametric bootstrap CI for the mean document length — the
-    uncertainty quote every corpus-stat release should carry. B=200
-    deterministic resamples-with-replacement: draw (b, j) picks the doc
-    ranked 1 + (md5('boot|b|j') mod n) — indexable replay, the
-    dp_cell_counts seeded-mechanism discipline (no RNG, identical on every
-    engine/run). Every replicate mean is an exact integer sum over n draws
-    divided by the same n, so cross-engine ordering of means is
-    bit-identical; CI = percentile method at ranks 5 / 196 of the 200
-    sorted means. Scale shape: the B·n draw explode is declared O(B·n) and
-    feeds ONE equi-join on rank + one agg (the permutation_test posture);
-    display via floor-truncation of exact ratios."""
-    from pyspark.sql import Window
-
-    d = (
-        _read(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < _BOOT_POOL)
-        .select("doc_id", "n_chars")
-    )
-    cnt = d.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("s")
-    )
-    # two-phase rank over the literal-bounded pool (no row-level
-    # partition-less window even here — same value, lint-clean shape)
-    ranked = _two_phase_row_number(
-        d, F.floor(F.col("doc_id") / 64).cast("long"), [F.col("doc_id")],
-        out="rk",
-    )
-    draws = (
-        ranked.select(F.col("rk").alias("j"))
-        .select("j", F.explode(F.sequence(F.lit(1), F.lit(_BOOT_B))).alias("b"))
-        .crossJoin(F.broadcast(cnt))
-        .select(
-            "b",
-            "n",
-            (
-                F.lit(1)
-                + F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("boot|"), F.col("b"), F.lit("|"), F.col("j")
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % F.col("n")
-            ).alias("idx"),
-        )
-    )
-    means = (
-        draws.join(ranked, draws.idx == ranked.rk)
-        .groupBy("b")
-        .agg((F.sum("n_chars") / F.max("n")).alias("mean_b"))
-    )
-    mw = Window.orderBy("mean_b", "b")
-    sel = means.withColumn("q", F.row_number().over(mw))
-    lo_rk, hi_rk = 5, 196
-    trunc6 = lambda c: F.floor(c * 1e6) / 1e6  # noqa: E731
-    return (
-        cnt.crossJoin(
-            sel.filter(F.col("q") == lo_rk).select(
-                trunc6(F.col("mean_b")).alias("ci_lo")
-            )
-        )
-        .crossJoin(
-            sel.filter(F.col("q") == hi_rk).select(
-                trunc6(F.col("mean_b")).alias("ci_hi")
-            )
-        )
-        .select(
-            F.col("n").alias("n_docs"),
-            F.lit(_BOOT_B).cast("long").alias("n_reps"),
-            trunc6(F.col("s") / F.col("n")).alias("obs_mean"),
-            "ci_lo",
-            "ci_hi",
-        )
-    )
-
-
-def _bootstrap_ci_sql() -> str:
-    return f"""
-        WITH d AS (SELECT doc_id, n_chars FROM documents
-                   WHERE doc_id < {_BOOT_POOL}),
-        cnt AS (SELECT COUNT(*) AS n, SUM(n_chars) AS s FROM d),
-        ranked AS (SELECT n_chars,
-                          ROW_NUMBER() OVER (ORDER BY doc_id) AS rk
-                   FROM d),
-        draws AS (
-            SELECT b, n,
-                   1 + ('0x' || substr(md5('boot|' || CAST(b AS VARCHAR)
-                                       || '|' || CAST(j AS VARCHAR)), 1, 8)
-                       )::BIGINT % n AS idx
-            FROM (SELECT rk AS j FROM ranked),
-                 (SELECT UNNEST(generate_series(1, {_BOOT_B})) AS b),
-                 cnt),
-        means AS (
-            SELECT b, SUM(r.n_chars) / CAST(MAX(dr.n) AS DOUBLE) AS mean_b
-            FROM draws dr JOIN ranked r ON dr.idx = r.rk
-            GROUP BY b),
-        sel AS (SELECT mean_b,
-                       ROW_NUMBER() OVER (ORDER BY mean_b, b) AS q
-                FROM means)
-        SELECT CAST(cnt.n AS BIGINT) AS n_docs,
-               CAST({_BOOT_B} AS BIGINT) AS n_reps,
-               FLOOR(cnt.s / CAST(cnt.n AS DOUBLE) * 1e6) / 1e6 AS obs_mean,
-               (SELECT FLOOR(mean_b * 1e6) / 1e6 FROM sel WHERE q = 5)
-                   AS ci_lo,
-               (SELECT FLOOR(mean_b * 1e6) / 1e6 FROM sel WHERE q = 196)
-                   AS ci_hi
-        FROM cnt
-    """
-
-
-# ---------------------------------------------------------------------------
-# 11-point interpolated precision-recall curve (session 10)
-# ---------------------------------------------------------------------------
-
-_PR_POOL, _PR_K = 500, 500
-
-
-def q_pr_curve_11pt(spark, sf_dir):
-    """TREC-style 11-point interpolated precision-recall curve of the BM25
-    ranking against binary relevance (quality_score ≥ 0.95) on a bounded
-    500-doc pool — the full-curve companion to the scalar eval family
-    (bm25_eval MRR/MAP, ndcg_bm25, rbo_rankings): p_interp(r) =
-    max{precision@i : recall@i ≥ r} at r = 0.0, 0.1, ..., 1.0. Ranking the
-    whole pool (k = pool) lets recall reach its true maximum. Precision and
-    recall are exact integer ratios at every cutoff, so the ≥-level
-    comparisons are bit-identical cross-engine; the 11×k level join is a
-    broadcast-tiny theta join. Missing levels (recall never reached) report
-    the standard 0.0."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import bm25_topk
-
-    docs = (
-        _read(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < _PR_POOL)
-        .select("doc_id", "text")
-    )
-    rel = docs.select(
-        "doc_id", (quality_score(F.col("text")) >= _REL_T).cast("int").alias("rel")
-    )
-    r_tot = rel.agg(F.sum("rel").cast("long").alias("r_total"))
-    ranked = bm25_topk(docs, list(_BM25_TERMS), _PR_K).select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("score").desc(), "doc_id"))
-        .alias("pos"),
-    )
-    w = Window.orderBy("pos").rowsBetween(Window.unboundedPreceding, 0)
-    pr = (
-        ranked.join(rel, "doc_id")
-        .withColumn("cum_rel", F.sum("rel").over(w))
-        .crossJoin(F.broadcast(r_tot))
-        .select(
-            (F.col("cum_rel").cast("double") / F.col("pos")).alias("p_i"),
-            (F.col("cum_rel").cast("double") / F.col("r_total")).alias("rec_i"),
-        )
-    )
-    levels = spark.range(0, 11).select(
-        (F.col("id") / F.lit(10.0)).alias("recall_level")
-    )
-    curve = (
-        levels.join(
-            F.broadcast(pr), F.col("rec_i") >= F.col("recall_level"), "left"
-        )
-        .groupBy("recall_level")
-        .agg(
-            (F.floor(F.coalesce(F.max("p_i"), F.lit(0.0)) * 1e6) / 1e6).alias(
-                "p_interp"
-            )
-        )
-    )
-    return curve.orderBy("recall_level")
-
-
-def _pr_curve_11pt_sql() -> str:
-    from raptor_service_spark.functions.text import quality_score_sql
-    from raptor_service_spark.operators.bm25 import bm25_sql
-
-    pool = f"(SELECT doc_id, text FROM documents WHERE doc_id < {_PR_POOL})"
-    kw = bm25_sql(pool, list(_BM25_TERMS), _PR_K)
-    qs = quality_score_sql("text")
-    return f"""
-        WITH pool AS (SELECT doc_id, text FROM documents
-                      WHERE doc_id < {_PR_POOL}),
-        rel AS (SELECT doc_id,
-                       CASE WHEN {qs} >= {_REL_T} THEN 1 ELSE 0 END AS rel
-                FROM pool),
-        rtot AS (SELECT CAST(SUM(rel) AS BIGINT) AS r_total FROM rel),
-        ranked AS (
-            SELECT doc_id,
-                   ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS pos
-            FROM ({kw})),
-        pr AS (
-            SELECT SUM(rel) OVER (ORDER BY pos ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW)
-                       / CAST(pos AS DOUBLE) AS p_i,
-                   SUM(rel) OVER (ORDER BY pos ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW)
-                       / CAST((SELECT r_total FROM rtot) AS DOUBLE) AS rec_i
-            FROM ranked JOIN rel USING (doc_id)),
-        levels AS (SELECT UNNEST(generate_series(0, 10)) / 10.0
-                       AS recall_level)
-        SELECT recall_level,
-               FLOOR(COALESCE(MAX(p_i), 0.0) * 1e6) / 1e6 AS p_interp
-        FROM levels LEFT JOIN pr ON pr.rec_i >= levels.recall_level
-        GROUP BY recall_level
-        ORDER BY recall_level
-    """
-
-
-# ---------------------------------------------------------------------------
-# Kalman track smoothing as an ordered array fold (session 10)
-# ---------------------------------------------------------------------------
-
-_KAL_POOL, _KAL_MIN_FIX = 300, 5
-_KAL_Q, _KAL_R = 0.01, 0.25
-
-
-def _kalman_step_expr(ea, arr):
-    """The per-fix Kalman update, emitted from ONE Python source for both
-    engines (the shared-literal discipline): random-walk predict
-    p1 = p + Q, gain k = p1/(p1+R), state += k·innovation, p = (1−k)·p1,
-    plus the |innovation| L1 accumulator. ``ea(name, i)`` renders 1-based
-    element access; ``arr(parts)`` renders an array literal. No let
-    bindings exist in either engine's lambda, so k/p1 are substituted
-    textually — byte-identical arithmetic on both sides."""
-    a1, a2, a3, a4 = (ea("acc", i) for i in range(1, 5))
-    z1, z2 = ea("z", 1), ea("z", 2)
-    p1 = f"round({a3} + {_KAL_Q!r}, 9)"
-    k = f"round({p1} / ({p1} + {_KAL_R!r}), 9)"
-    return arr(
-        [
-            f"round({a1} + {k} * ({z1} - {a1}), 9)",
-            f"round({a2} + {k} * ({z2} - {a2}), 9)",
-            f"round((1.0 - {k}) * {p1}, 9)",
-            f"round({a4} + round(abs({z1} - {a1}) + abs({z2} - {a2}), 9), 9)",
-        ]
-    )
-
-
-def q_kalman_tracks(spark, sf_dir):
-    """Per-user 2-D random-walk Kalman smoother over the ordered fix
-    sequence — the GPS-denoising step a mobility pipeline runs before
-    stay-point / trajectory analysis. State (x_lat, x_lng, p) folds over
-    the user's (ts, event_id)-sorted track with per-step 9-dp rounding as
-    ONE ordered array fold (aggregate ↔ list_reduce — a groupBy SUM would
-    reassociate floats and the filter is order-dependent anyway); also
-    accumulates the L1 innovation total (the track's noise mass). One
-    collect_list shuffle per user, O(track) fold, no UDF. Users with ≥ 5
-    fixes in the bounded pool; display via floor-truncation."""
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < _KAL_POOL)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        F.col("event_id").alias("e"),
-        lat.alias("a"),
-        lng.alias("g"),
-    )
-    tracks = (
-        pts.groupBy("user_id")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(struct(t, e, a, g))), "
-                "s -> array(s.a, s.g))"
-            ).alias("pts")
-        )
-        .filter(F.size("pts") >= _KAL_MIN_FIX)
-    )
-    step = _kalman_step_expr(
-        lambda n, i: f"element_at({n}, {i})",
-        lambda parts: "array(" + ", ".join(parts) + ")",
-    )
-    fold = (
-        "aggregate(slice(pts, 2, size(pts) - 1), "
-        "array(element_at(element_at(pts, 1), 1), "
-        "element_at(element_at(pts, 1), 2), "
-        "cast(1.0 as double), cast(0.0 as double)), "
-        f"(acc, z) -> {step})"
-    )
-    out = tracks.select(
-        "user_id",
-        F.size("pts").cast("long").alias("n_fixes"),
-        F.expr(fold).alias("st"),
-    )
-    t6 = lambda c: F.floor(c * 1e6) / 1e6  # noqa: E731
-    return out.select(
-        "user_id",
-        "n_fixes",
-        t6(F.expr("element_at(st, 1)")).alias("x_lat"),
-        t6(F.expr("element_at(st, 2)")).alias("x_lng"),
-        t6(F.expr("element_at(st, 3)")).alias("p_var"),
-        t6(F.expr("element_at(st, 4)")).alias("innov_l1"),
-    ).orderBy("user_id")
-
-
-def _kalman_tracks_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    step = _kalman_step_expr(
-        lambda n, i: f"{n}[{i}]",
-        lambda parts: "[" + ", ".join(parts) + "]",
-    )
-    fold = (
-        "list_reduce(list_prepend("
-        "[pts[1][1], pts[1][2], CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)], "
-        f"pts[2:]), (acc, z) -> {step})"
-    )
-    return f"""
-        WITH p AS (
-            SELECT user_id, epoch_us(ts) AS t, event_id AS e,
-                   {lat} AS a, {lng} AS g
-            FROM events WHERE user_id < {_KAL_POOL}),
-        tr AS (
-            SELECT user_id,
-                   list_transform(
-                       list_sort(list({{'t': t, 'e': e, 'a': a, 'g': g}})),
-                       s -> [s.a, s.g]) AS pts
-            FROM p GROUP BY user_id),
-        ok AS (SELECT user_id, pts FROM tr WHERE len(pts) >= {_KAL_MIN_FIX}),
-        st AS (SELECT user_id, CAST(len(pts) AS BIGINT) AS n_fixes,
-                      {fold} AS s
-               FROM ok)
-        SELECT user_id, n_fixes,
-               FLOOR(s[1] * 1e6) / 1e6 AS x_lat,
-               FLOOR(s[2] * 1e6) / 1e6 AS x_lng,
-               FLOOR(s[3] * 1e6) / 1e6 AS p_var,
-               FLOOR(s[4] * 1e6) / 1e6 AS innov_l1
-        FROM st ORDER BY user_id
-    """
-
-
-# ---------------------------------------------------------------------------
-# Holt linear-trend exponential smoothing (session 10)
-# ---------------------------------------------------------------------------
-
-_HOLT_ALPHA, _HOLT_BETA, _HOLT_RES = 0.5, 0.25, 3
-
-
-def _holt_step_expr(ea, arr):
-    """Holt's double-exponential update from ONE Python source for both
-    engines: l' = αx + (1−α)(l+b), b' = β(l'−l) + (1−β)b, SSE += (x−l−b)²
-    (one-step-ahead forecast error BEFORE the update — the honest
-    in-sample error). l' is substituted textually (no let bindings)."""
-    l, b, sse = ea("acc", 1), ea("acc", 2), ea("acc", 3)
-    x = ea("z", 1)
-    lp = (
-        f"round({_HOLT_ALPHA!r} * {x} + "
-        f"(1.0 - {_HOLT_ALPHA!r}) * ({l} + {b}), 9)"
-    )
-    return arr(
-        [
-            lp,
-            f"round({_HOLT_BETA!r} * ({lp} - {l}) + "
-            f"(1.0 - {_HOLT_BETA!r}) * {b}, 9)",
-            f"round({sse} + round(({x} - {l} - {b}) * ({x} - {l} - {b}), 9), 9)",
-        ]
-    )
-
-
-def q_holt_trend_cells(spark, sf_dir):
-    """Holt linear-trend smoothing of the two busiest res-3 cells' hourly
-    count series — the forecasting baseline next to the diagnostic family
-    (stl_lite = decomposition, ewma_anomaly = level-only monitor, holt adds
-    the trend term and a 1..3-hour-ahead forecast). Series are DENSE over
-    the global hour span (missing hours = 0, the cell_xcorr convention);
-    the recursion folds as ONE ordered array fold per cell with per-step
-    9-dp rounding (aggregate ↔ list_reduce); init l₀ = x₁, b₀ = 0. Scale
-    shape: one (cell, hour) agg + an O(hours) fold per cell; busiest cells
-    recomputed as scalar subqueries in the oracle."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        cell_encode_col(lat, lng, _HOLT_RES).alias("cell"),
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(3600000000)
-        ).alias("hr"),
-    )
-    top2 = sorted(
-        r.cell
-        for r in pts.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), "cell")
-        .limit(2)
-        .collect()
-    )
-    span = pts.agg(F.min("hr").alias("h0"), F.max("hr").alias("h1"))
-    grid = span.select(
-        F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("hr")
-    ).crossJoin(
-        spark.createDataFrame([(c,) for c in top2], "cell long")
-    )
-    cnts = (
-        pts.filter(F.col("cell").isin(top2))
-        .groupBy("cell", "hr")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    series = (
-        grid.join(cnts, ["cell", "hr"], "left")
-        .select("cell", "hr", F.coalesce("c", F.lit(0)).alias("x"))
-        .groupBy("cell")
-        .agg(
-            F.expr(
-                "transform(sort_array(collect_list(struct(hr, x))), "
-                "s -> array(cast(s.x as double)))"
-            ).alias("xs")
-        )
-    )
-    step = _holt_step_expr(
-        lambda n, i: f"element_at({n}, {i})",
-        lambda parts: "array(" + ", ".join(parts) + ")",
-    )
-    fold = (
-        "aggregate(slice(xs, 2, size(xs) - 1), "
-        "array(element_at(element_at(xs, 1), 1), "
-        "cast(0.0 as double), cast(0.0 as double)), "
-        f"(acc, z) -> {step})"
-    )
-    out = series.select(
-        "cell", F.size("xs").cast("long").alias("n_hours"), F.expr(fold).alias("st")
-    )
-    t6 = lambda c: F.floor(c * 1e6) / 1e6  # noqa: E731
-    lvl = F.expr("element_at(st, 1)")
-    trd = F.expr("element_at(st, 2)")
-    return out.select(
-        "cell",
-        "n_hours",
-        t6(lvl).alias("level"),
-        t6(trd).alias("trend"),
-        t6(lvl + trd).alias("fc_1h"),
-        t6(lvl + 2 * trd).alias("fc_2h"),
-        t6(lvl + 3 * trd).alias("fc_3h"),
-        t6(F.expr("element_at(st, 3)")).alias("sse"),
-    ).orderBy("cell")
-
-
-def _holt_trend_cells_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _HOLT_RES)
-    step = _holt_step_expr(
-        lambda n, i: f"{n}[{i}]",
-        lambda parts: "[" + ", ".join(parts) + "]",
-    )
-    fold = (
-        "list_reduce(list_prepend("
-        "[xs[1][1], CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE)], "
-        f"xs[2:]), (acc, z) -> {step})"
-    )
-    top2 = (
-        "(SELECT cell FROM (SELECT cell, COUNT(*) AS c FROM p "
-        "GROUP BY 1 ORDER BY c DESC, cell LIMIT 2))"
-    )
-    return f"""
-        WITH p AS (
-            SELECT {cell} AS cell,
-                   CAST(FLOOR(epoch_us(ts) / 3600000000) AS BIGINT) AS hr
-            FROM events),
-        span AS (SELECT MIN(hr) AS h0, MAX(hr) AS h1 FROM p),
-        grid AS (
-            SELECT t.cell, UNNEST(generate_series(span.h0, span.h1)) AS hr
-            FROM span, {top2} AS t(cell)),
-        cnts AS (
-            SELECT cell, hr, COUNT(*) AS c FROM p
-            WHERE cell IN {top2} GROUP BY 1, 2),
-        xs AS (
-            SELECT g.cell, g.hr, COALESCE(c.c, 0) AS x
-            FROM grid g LEFT JOIN cnts c ON g.cell = c.cell AND g.hr = c.hr),
-        ser AS (
-            SELECT cell,
-                   list_transform(list_sort(list({{'hr': hr, 'x': x}})),
-                                  s -> [CAST(s.x AS DOUBLE)]) AS xs
-            FROM xs GROUP BY cell),
-        st AS (SELECT cell, CAST(len(xs) AS BIGINT) AS n_hours,
-                      {fold} AS s
-               FROM ser)
-        SELECT cell, n_hours,
-               FLOOR(s[1] * 1e6) / 1e6 AS level,
-               FLOOR(s[2] * 1e6) / 1e6 AS trend,
-               FLOOR((s[1] + s[2]) * 1e6) / 1e6 AS fc_1h,
-               FLOOR((s[1] + 2 * s[2]) * 1e6) / 1e6 AS fc_2h,
-               FLOOR((s[1] + 3 * s[2]) * 1e6) / 1e6 AS fc_3h,
-               FLOOR(s[3] * 1e6) / 1e6 AS sse
-        FROM st ORDER BY cell
-    """
-
-
-# ---------------------------------------------------------------------------
-# SemDeDup: semantic dedup inside embedding clusters (session 10)
+# SemDeDup: semantic dedup inside embedding clusters
 # ---------------------------------------------------------------------------
 
 _SEM_POOL, _SEM_K, _SEM_T = 300, 4, 0.55
@@ -18211,2339 +3889,7 @@ def _semdedup_clusters_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# pLSA topic model as relational EM (session 10)
-# ---------------------------------------------------------------------------
-
-_PLSA_POOL, _PLSA_V, _PLSA_K, _PLSA_R, _PLSA_TOP = 120, 30, 3, 3, 5
-
-
-def _plsa_init(kind: str, idx: str, k: str) -> str:
-    """Deterministic symmetry-breaking init weight, ONE Python source for
-    both engines: v = 1.0 + 0.1·((idx·a + k·b) mod m) with distinct
-    (a, b, m) per parameter family (uniform init is an EM fixed point)."""
-    a, b, m = (7, 13, 5) if kind == "theta" else (11, 17, 7)
-    # CAST literals to DOUBLE: DuckDB would otherwise run this in DECIMAL
-    # arithmetic (Spark literals are doubles) and the init grids diverge
-    return (
-        f"CAST(1.0 AS DOUBLE) + CAST(0.1 AS DOUBLE) * "
-        f"(({idx} * {a} + {k} * {b}) % {m})"
-    )
-
-
-def q_plsa_topics(spark, sf_dir):
-    """pLSA topic model (Hofmann 1999) trained by 3 relational EM rounds
-    over the aggregated (doc, term, tf) table — the topic-mixture
-    decomposition a curation pipeline uses for corpus composition audits
-    and diversity-aware sampling, expressed entirely as joins + aggs on
-    O(docs·vocab) rows (the dataflow LDA-at-scale systems run; no UDF, no
-    driver state beyond the loop counter). E-step: p(k|d,w) ∝ θ_dk·φ_kw
-    normalized per (d,w); M-step re-estimates both parameter tables with
-    9-dp rounding after every normalization (the logreg_train/kmeans_geo
-    unrolled-rounds protocol — the oracle replays the identical rounds as
-    MATERIALIZED CTE chains). Deterministic modular-arithmetic init breaks
-    the uniform-init symmetry identically in both engines. Output: top-5
-    terms per topic. Scale shape: parameter tables are O(docs·K) and
-    O(K·vocab); each round is two equi-joins + three aggs on the bounded
-    cnt×K stream; vocab/doc pools bound everything (the dtw cohort
-    posture)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import doc_postings
-
-    docs = (
-        _read(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < _PLSA_POOL)
-        .select("doc_id", "text")
-    )
-    post = doc_postings(docs).localCheckpoint(eager=True)
-    vocab = (
-        post.groupBy("term")
-        .agg(F.sum("tf").alias("cf"))
-        .withColumn(
-            "rw",
-            F.row_number().over(Window.orderBy(F.col("cf").desc(), "term")),
-        )
-        .filter(F.col("rw") <= _PLSA_V)
-        .select("term", "rw")
-        .localCheckpoint(eager=True)
-    )
-    cnt = (
-        post.join(vocab, "term")
-        .select(F.col("doc_id").alias("d"), F.col("term").alias("w"), "rw", "tf")
-        .localCheckpoint(eager=True)
-    )
-    ks = spark.range(_PLSA_K).select(F.col("id").cast("long").alias("k"))
-    # deterministic init, normalized per row-group, 9-dp
-    th_raw = (
-        cnt.select("d")
-        .distinct()
-        .crossJoin(F.broadcast(ks))
-        .withColumn("v", F.expr(_plsa_init("theta", "d", "k")))
-    )
-    th_norm = th_raw.groupBy("d").agg(F.sum("v").alias("z"))
-    theta = (
-        th_raw.join(th_norm, "d")
-        .select("d", "k", F.round(F.col("v") / F.col("z"), 9).alias("th"))
-        .localCheckpoint(eager=True)
-    )
-    ph_raw = vocab.crossJoin(F.broadcast(ks)).withColumn(
-        "v", F.expr(_plsa_init("phi", "rw", "k"))
-    )
-    ph_norm = ph_raw.groupBy("k").agg(F.sum("v").alias("z"))
-    phi = (
-        ph_raw.join(ph_norm, "k")
-        .select("k", F.col("term").alias("w"), F.round(F.col("v") / F.col("z"), 9).alias("ph"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_PLSA_R):
-        j = (
-            cnt.join(theta, "d")
-            .join(phi, ["k", "w"])
-            .withColumn("pr", F.round(F.col("th") * F.col("ph"), 9))
-        )
-        z = j.groupBy("d", "w").agg(F.round(F.sum("pr"), 9).alias("z"))
-        wgt = (
-            j.join(z, ["d", "w"])
-            .withColumn("p", F.round(F.col("pr") / F.col("z"), 9))
-            .withColumn("wt", F.round(F.col("tf") * F.col("p"), 9))
-            .select("d", "w", "k", "wt")
-            .localCheckpoint(eager=True)
-        )
-        s_kw = wgt.groupBy("k", "w").agg(F.round(F.sum("wt"), 9).alias("s"))
-        tot_k = s_kw.groupBy("k").agg(F.round(F.sum("s"), 9).alias("tot"))
-        phi = (
-            s_kw.join(tot_k, "k")
-            .select("k", "w", F.round(F.col("s") / F.col("tot"), 9).alias("ph"))
-            .localCheckpoint(eager=True)
-        )
-        s_dk = wgt.groupBy("d", "k").agg(F.round(F.sum("wt"), 9).alias("s"))
-        tot_d = s_dk.groupBy("d").agg(F.round(F.sum("s"), 9).alias("tot"))
-        theta = (
-            s_dk.join(tot_d, "d")
-            .select("d", "k", F.round(F.col("s") / F.col("tot"), 9).alias("th"))
-            .localCheckpoint(eager=True)
-        )
-    top = Window.partitionBy("k").orderBy(F.col("ph").desc(), "w")
-    return (
-        phi.withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= _PLSA_TOP)
-        .select(
-            "k",
-            F.col("w").alias("term"),
-            (F.floor(F.col("ph") * 1e6) / 1e6).alias("phi"),
-            "rk",
-        )
-        .orderBy("k", "rk")
-    )
-
-
-def _plsa_topics_sql() -> str:
-    from raptor_service_spark.operators.bm25 import TOKEN_PATTERN
-
-    rounds = []
-    prev_th, prev_ph = "theta0", "phi0"
-    for r in range(1, _PLSA_R + 1):
-        rounds.append(
-            f"""
-        j{r} AS (
-            SELECT cnt.d, cnt.w, t.k, cnt.tf,
-                   ROUND(t.th * p.ph, 9) AS pr
-            FROM cnt JOIN {prev_th} t ON cnt.d = t.d
-                     JOIN {prev_ph} p ON p.k = t.k AND p.w = cnt.w),
-        z{r} AS (SELECT d, w, ROUND(SUM(pr), 9) AS z FROM j{r} GROUP BY 1, 2),
-        wgt{r} AS MATERIALIZED (
-            SELECT j.d, j.w, j.k,
-                   ROUND(j.tf * ROUND(j.pr / z.z, 9), 9) AS wt
-            FROM j{r} j JOIN z{r} z ON j.d = z.d AND j.w = z.w),
-        skw{r} AS (SELECT k, w, ROUND(SUM(wt), 9) AS s
-                   FROM wgt{r} GROUP BY 1, 2),
-        totk{r} AS (SELECT k, ROUND(SUM(s), 9) AS tot FROM skw{r} GROUP BY 1),
-        phi{r} AS MATERIALIZED (
-            SELECT s.k, s.w, ROUND(s.s / t.tot, 9) AS ph
-            FROM skw{r} s JOIN totk{r} t ON s.k = t.k),
-        sdk{r} AS (SELECT d, k, ROUND(SUM(wt), 9) AS s
-                   FROM wgt{r} GROUP BY 1, 2),
-        totd{r} AS (SELECT d, ROUND(SUM(s), 9) AS tot FROM sdk{r} GROUP BY 1),
-        theta{r} AS MATERIALIZED (
-            SELECT s.d, s.k, ROUND(s.s / t.tot, 9) AS th
-            FROM sdk{r} s JOIN totd{r} t ON s.d = t.d)"""
-        )
-        prev_th, prev_ph = f"theta{r}", f"phi{r}"
-    chain = ",".join(rounds)
-    th_init = _plsa_init("theta", "d", "k")
-    ph_init = _plsa_init("phi", "rw", "k")
-    return f"""
-        WITH pool AS (SELECT doc_id, text FROM documents
-                      WHERE doc_id < {_PLSA_POOL}),
-        post AS MATERIALIZED (
-            SELECT doc_id, t.term, COUNT(*) AS tf
-            FROM pool,
-                 unnest(regexp_extract_all(lower(text),
-                        '{TOKEN_PATTERN}', 0)) AS t(term)
-            GROUP BY 1, 2),
-        vocab AS MATERIALIZED (
-            SELECT term, rw FROM (
-                SELECT term,
-                       ROW_NUMBER() OVER (ORDER BY SUM(tf) DESC, term) AS rw
-                FROM post GROUP BY term)
-            WHERE rw <= {_PLSA_V}),
-        cnt AS MATERIALIZED (
-            SELECT p.doc_id AS d, p.term AS w, v.rw, p.tf
-            FROM post p JOIN vocab v ON p.term = v.term),
-        ks AS (SELECT CAST(UNNEST(generate_series(0, {_PLSA_K - 1})) AS BIGINT)
-                   AS k),
-        thraw AS (
-            SELECT d, k, {th_init} AS v
-            FROM (SELECT DISTINCT d FROM cnt), ks),
-        theta0 AS MATERIALIZED (
-            SELECT t.d, t.k, ROUND(t.v / z.z, 9) AS th
-            FROM thraw t JOIN (SELECT d, SUM(v) AS z FROM thraw GROUP BY 1) z
-              ON t.d = z.d),
-        phraw AS (
-            SELECT v.term AS w, k, {ph_init} AS v
-            FROM vocab v, ks),
-        phi0 AS MATERIALIZED (
-            SELECT p.k, p.w, ROUND(p.v / z.z, 9) AS ph
-            FROM phraw p JOIN (SELECT k, SUM(v) AS z FROM phraw GROUP BY 1) z
-              ON p.k = z.k),{chain}
-        SELECT k, w AS term, FLOOR(ph * 1e6) / 1e6 AS phi, rk
-        FROM (SELECT k, w, ph,
-                     CAST(ROW_NUMBER() OVER (PARTITION BY k
-                          ORDER BY ph DESC, w) AS BIGINT) AS rk
-              FROM phi{_PLSA_R})
-        WHERE rk <= {_PLSA_TOP}
-        ORDER BY k, rk
-    """
-
-
-# ---------------------------------------------------------------------------
-# Epanechnikov KDE hotspot surface (session 10)
-# ---------------------------------------------------------------------------
-
-_KDE_RES, _KDE_K, _KDE_TOPK = 4, 2, 20
-
-
-def q_kde_hotspots(spark, sf_dir):
-    """Kernel density estimate over the tile grid — the smoothed hotspot
-    surface (heat map) next to the raw-count family (hot_cells = argmax
-    counts, cell_kring_smooth = uniform ring mean, getis_hotspots =
-    significance): density(c) = Σ_{|Δ|∞ ≤ 2} n(c+Δ)·K(r) with the
-    Epanechnikov kernel K(r) = 1 − (r/3)² at Chebyshev ring distance r.
-    Scaled ×9 the weights are the INTEGERS {9, 8, 5}, so the whole surface
-    is exact integer arithmetic — no float protocol at all. One count agg
-    + a 25-offset JVM-side explode + one ring join (the kring_smooth
-    dataflow); top-20 densest cells."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    cnt = d.groupBy(cell_encode_col(lat, lng, _KDE_RES).alias("cell")).agg(
-        F.count(F.lit(1)).alias("n_points")
-    )
-    terms = [
-        F.struct(
-            kring_neighbor_col("cell", _KDE_RES, dx, dy).alias("nbr"),
-            F.lit(9 - max(abs(dx), abs(dy)) ** 2).cast("long").alias("w"),
-        )
-        for dx, dy in _offsets(_KDE_K)
-    ]
-    pairs = cnt.select(
-        "cell",
-        "n_points",
-        F.explode(F.filter(F.array(*terms), lambda s: s["nbr"].isNotNull())).alias(
-            "t"
-        ),
-    ).select("cell", "n_points", F.col("t.nbr").alias("nbr"), F.col("t.w").alias("w"))
-    ring = pairs.join(
-        cnt.select(F.col("cell").alias("nbr"), F.col("n_points").alias("np2")),
-        "nbr",
-        "left",
-    )
-    kde = ring.groupBy("cell").agg(
-        F.max("n_points").alias("n_points"),
-        F.sum(F.coalesce("np2", F.lit(0)) * F.col("w")).alias("kde_x9"),
-    )
-    top = Window.orderBy(F.col("kde_x9").desc(), "cell")
-    return (
-        kde.withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= _KDE_TOPK)
-        .select("cell", "n_points", F.col("kde_x9").cast("long").alias("kde_x9"), "rk")
-    )
-
-
-def _kde_hotspots_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _KDE_RES)
-    offs = ", ".join(
-        f"({dx}, {dy}, {9 - max(abs(dx), abs(dy)) ** 2})"
-        for dx, dy in _offsets(_KDE_K)
-    )
-    nbr = kring_neighbor_sql("c.cell", _KDE_RES, "o.dx", "o.dy")
-    return f"""
-        WITH c AS (SELECT {cell} AS cell, COUNT(*) AS n_points
-                   FROM documents GROUP BY 1),
-        p AS (SELECT c.cell, c.n_points, {nbr} AS nbr, o.w
-              FROM c CROSS JOIN (VALUES {offs}) o(dx, dy, w)
-              WHERE {nbr} IS NOT NULL),
-        k AS (SELECT p.cell, MAX(p.n_points) AS n_points,
-                     CAST(SUM(COALESCE(c2.n_points, 0) * p.w) AS BIGINT)
-                         AS kde_x9
-              FROM p LEFT JOIN c c2 ON p.nbr = c2.cell
-              GROUP BY 1)
-        SELECT cell, n_points, kde_x9, rk FROM (
-            SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY kde_x9 DESC, cell)
-                           AS BIGINT) AS rk
-            FROM k)
-        WHERE rk <= {_KDE_TOPK}
-    """
-
-
-# ---------------------------------------------------------------------------
-# hard-negative mining for contrastive training (session 10)
-# ---------------------------------------------------------------------------
-
-_HN_Q, _HN_POOL, _HN_K, _HN_RES = 30, 400, 4, 2
-
-
-def q_hard_negatives(spark, sf_dir):
-    """Hard-negative mining — the training-data op behind contrastive
-    retrieval fine-tuning (DPR/SimCSE style): for each query document,
-    the top-k most-similar candidates that are NOT its positives. The
-    positive proxy here is spatial co-location (same res-2 tile — the
-    tile tree's own notion of relatedness), so a hard negative is a
-    high-cosine vector from a DIFFERENT tile: maximally confusing,
-    maximally informative gradient. One bounded q×pool broadcast scoring
-    join (at corpus scale the candidate side comes from the ANN index —
-    grid_knn_ann's ring planner — instead of a full pool scan; this
-    bounded pool is the declared parity twin), exact fold cosine,
-    per-query top-4 window."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    emb = _read(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    lat, lng = _latlng_cols(F.col("vec_id"))
-    cells = emb.select(
-        "vec_id", "embedding", cell_encode_col(lat, lng, _HN_RES).alias("cell")
-    )
-    q = cells.filter(F.col("vec_id") < _HN_Q).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("vq"),
-        F.col("cell").alias("qcell"),
-    )
-    c = cells.filter(F.col("vec_id") < _HN_POOL).select(
-        F.col("vec_id").alias("neg_id"),
-        F.col("embedding").alias("vc"),
-        F.col("cell").alias("ccell"),
-    )
-    dot = F.aggregate(
-        F.zip_with("vq", "vc", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nq = F.sqrt(
-        F.aggregate(
-            "vq", F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    nc = F.sqrt(
-        F.aggregate(
-            "vc", F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-    pairs = (
-        q.join(
-            F.broadcast(c),
-            (F.col("qid") != F.col("neg_id")) & (F.col("qcell") != F.col("ccell")),
-        )
-        .withColumn("cosine", F.round(dot / (nq * nc), 6))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "neg_id")
-    return (
-        pairs.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= _HN_K)
-        .select("qid", "neg_id", "cosine", "rk")
-        .orderBy("qid", "rk")
-    )
-
-
-def _hard_negatives_sql() -> str:
-    lat, lng = _latlng_sql("vec_id")
-    cell = cell_encode_sql(lat, lng, _HN_RES)
-    da = "list_transform(q.vq, x -> CAST(x AS DOUBLE))"
-    db = "list_transform(c.vc, x -> CAST(x AS DOUBLE))"
-    cos = f"list_cosine_similarity({da}, {db})"
-    return f"""
-        WITH cells AS (
-            SELECT vec_id, embedding, {cell} AS cell FROM embeddings),
-        q AS (SELECT vec_id AS qid, embedding AS vq, cell AS qcell
-              FROM cells WHERE vec_id < {_HN_Q}),
-        c AS (SELECT vec_id AS neg_id, embedding AS vc, cell AS ccell
-              FROM cells WHERE vec_id < {_HN_POOL}),
-        pairs AS (
-            SELECT q.qid, c.neg_id, ROUND({cos}, 6) AS cosine
-            FROM q JOIN c
-              ON q.qid != c.neg_id AND q.qcell != c.ccell)
-        SELECT qid, neg_id, cosine, rk FROM (
-            SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qid
-                           ORDER BY cosine DESC, neg_id) AS BIGINT) AS rk
-            FROM pairs)
-        WHERE rk <= {_HN_K}
-        ORDER BY qid, rk
-    """
-
-
-# ---------------------------------------------------------------------------
-# sampled-source betweenness centrality (Brandes, H-bounded) (session 10)
-# ---------------------------------------------------------------------------
-
-_BTW_SEEDS, _BTW_H, _BTW_RES, _BTW_TOPK = 2, 4, 4, 15
-
-
-def q_betweenness_cells(spark, sf_dir):
-    """Sampled-source betweenness centrality of the occupied res-4 cell
-    lattice — WHICH tiles carry the through-traffic (the corridor/bridge
-    detector next to pagerank's popularity and kcore's density). Exact
-    Brandes (2001) from the 2 busiest cells, horizon-bounded at H=4 hops
-    (the standard sampling + bounded-depth estimator — exact betweenness
-    is all-sources): forward level-synchronous BFS accumulates σ
-    (shortest-path COUNTS — exact integers), backward pass accumulates
-    the dependency δ(v) = Σ_w σv/σw·(1+δw) hop by hop with 9-dp rounds.
-    Spark: one frontier equi-join + anti-join per forward hop, one
-    3-table join per backward hop, seeds on concurrent threads over ONE
-    shared adjacency (the graph_eccentricity posture). Oracle: the
-    identical hops unrolled as CTE chains per seed."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.cell_graph import _adjacency, brandes_bounded
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = d.select(cell_encode_col(lat, lng, _BTW_RES).alias("cell"))
-    seeds = sorted(
-        r.cell
-        for r in occ.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), "cell")
-        .limit(_BTW_SEEDS)
-        .collect()
-    )
-    occ_d = occ.distinct().localCheckpoint(eager=True)
-    edges = _adjacency(occ_d, _BTW_RES).localCheckpoint(eager=True)
-
-    def _one_seed(s):
-        return brandes_bounded(occ_d, s, _BTW_RES, max_hops=_BTW_H, edges=edges)
-
-    with ThreadPoolExecutor(max_workers=len(seeds)) as ex:
-        parts = list(ex.map(_one_seed, seeds))
-    alld = parts[0]
-    for p in parts[1:]:
-        alld = alld.unionByName(p)
-    btw = alld.groupBy("cell").agg(F.round(F.sum("delta"), 9).alias("btw"))
-    top = Window.orderBy(F.col("btw").desc(), "cell")
-    return (
-        btw.filter(F.col("btw") > 0)
-        .withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= _BTW_TOPK)
-        .select("cell", (F.floor(F.col("btw") * 1e6) / 1e6).alias("btw"), "rk")
-    )
-
-
-def _betweenness_cells_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import _RING
-
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _BTW_RES)
-    nbr = kring_neighbor_sql("o.cell", _BTW_RES, "v.dx", "v.dy")
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _RING)
-    ctes = []
-    unions = []
-    for si in range(_BTW_SEEDS):
-        seed = (
-            f"(SELECT cell FROM (SELECT cell, COUNT(*) AS c FROM base "
-            f"GROUP BY 1 ORDER BY c DESC, cell LIMIT 1 OFFSET {si}))"
-        )
-        ctes.append(
-            f"f{si}_0 AS (SELECT cell, CAST(1 AS BIGINT) AS sigma "
-            f"FROM occ WHERE cell = {seed})"
-        )
-        ctes.append(f"v{si}_0 AS (SELECT cell FROM f{si}_0)")
-        for h in range(1, _BTW_H + 1):
-            ctes.append(
-                f"""f{si}_{h} AS (
-                SELECT e.dst AS cell, CAST(SUM(f.sigma) AS BIGINT) AS sigma
-                FROM f{si}_{h - 1} f JOIN e ON e.src = f.cell
-                WHERE e.dst NOT IN (SELECT cell FROM v{si}_{h - 1})
-                GROUP BY 1)"""
-            )
-            ctes.append(
-                f"v{si}_{h} AS (SELECT cell FROM v{si}_{h - 1} "
-                f"UNION ALL SELECT cell FROM f{si}_{h})"
-            )
-        ctes.append(
-            f"d{si}_{_BTW_H} AS (SELECT cell, sigma, "
-            f"CAST(0.0 AS DOUBLE) AS delta FROM f{si}_{_BTW_H})"
-        )
-        unions.append(f"SELECT cell, delta FROM d{si}_{_BTW_H}")
-        for h in range(_BTW_H - 1, 0, -1):
-            ctes.append(
-                f"""d{si}_{h} AS (
-                SELECT u.cell, u.sigma,
-                       ROUND(COALESCE(c.dsum, CAST(0.0 AS DOUBLE)), 9)
-                           AS delta
-                FROM f{si}_{h} u LEFT JOIN (
-                    SELECT e.src AS ucell,
-                           ROUND(SUM(ROUND(CAST(u2.sigma AS DOUBLE)
-                                 / CAST(w.sigma AS DOUBLE)
-                                 * (CAST(1.0 AS DOUBLE) + w.delta), 9)), 9)
-                               AS dsum
-                    FROM f{si}_{h} u2
-                    JOIN e ON e.src = u2.cell
-                    JOIN d{si}_{h + 1} w ON w.cell = e.dst
-                    GROUP BY 1) c ON c.ucell = u.cell)"""
-            )
-            unions.append(f"SELECT cell, delta FROM d{si}_{h}")
-    chain = ",\n        ".join(ctes)
-    union = "\n            UNION ALL ".join(unions)
-    return f"""
-        WITH base AS (SELECT {cell} AS cell FROM documents),
-        occ AS MATERIALIZED (SELECT DISTINCT cell FROM base),
-        e AS MATERIALIZED (
-            SELECT o.cell AS src, {nbr} AS dst
-            FROM occ o CROSS JOIN (VALUES {offs}) v(dx, dy)
-            WHERE {nbr} IS NOT NULL
-              AND {nbr} IN (SELECT cell FROM occ)),
-        {chain},
-        alld AS ({union}),
-        btw AS (SELECT cell, ROUND(SUM(delta), 9) AS btw
-                FROM alld GROUP BY 1)
-        SELECT cell, FLOOR(btw * 1e6) / 1e6 AS btw, rk FROM (
-            SELECT cell, btw,
-                   CAST(ROW_NUMBER() OVER (ORDER BY btw DESC, cell)
-                        AS BIGINT) AS rk
-            FROM btw WHERE btw > 0)
-        WHERE rk <= {_BTW_TOPK}
-    """
-
-
-# ---------------------------------------------------------------------------
-# temporal 2-path motifs over the timed transition graph (session 10)
-# ---------------------------------------------------------------------------
-
-_TM_POOL, _TM_RES, _TM_WIN, _TM_TOPK = 200, 3, 900, 20
-
-
-def q_temporal_motifs(spark, sf_dir):
-    """Temporal 2-path motif counting (Paranjape et al. 2017) over the
-    timed cell-transition graph: edges are user moves a→b stamped at the
-    arrival second; a motif is a→b (t₁) followed by b→c (t₂) BY ANY USER
-    with 0 < t₂−t₁ ≤ 15 min — the flow-relay structure plain OD counts
-    cannot see (od_triangles counts the untimed closure; this counts the
-    time-respecting wedge, split into pass-through c≠a vs bounce-back
-    c=a). Spark: the edge-table self-join on the middle cell is bucketed
-    by 15-min epoch (each left edge probes buckets {h, h+1} via a 2-value
-    explode, then the exact window refines — the knox/asof ring-join
-    posture, never a full time-cross product). All-integer output."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < _TM_POOL)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    sec = F.floor(
-        F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(1_000_000)
-    ).cast("long")
-    pts = ev.select(
-        "user_id",
-        sec.alias("t"),
-        F.col("event_id").alias("e"),
-        cell_encode_col(lat, lng, _TM_RES).alias("cell"),
-    )
-    w = Window.partitionBy("user_id").orderBy("t", "e")
-    mv = (
-        pts.withColumn("src", F.lag("cell").over(w))
-        .filter(F.col("src").isNotNull() & (F.col("src") != F.col("cell")))
-        .select("src", F.col("cell").alias("dst"), "t")
-        .localCheckpoint(eager=True)
-    )
-    left = mv.select(
-        F.col("src").alias("a"),
-        F.col("dst").alias("b"),
-        F.col("t").alias("t1"),
-        F.explode(
-            F.array(
-                F.floor(F.col("t") / _TM_WIN).cast("long"),
-                (F.floor(F.col("t") / _TM_WIN) + 1).cast("long"),
-            )
-        ).alias("hb"),
-    )
-    right = mv.select(
-        F.col("src").alias("b2"),
-        F.col("dst").alias("c"),
-        F.col("t").alias("t2"),
-        F.floor(F.col("t") / _TM_WIN).cast("long").alias("hb2"),
-    )
-    wedges = left.join(
-        right, (F.col("b") == F.col("b2")) & (F.col("hb") == F.col("hb2"))
-    ).filter((F.col("t2") > F.col("t1")) & (F.col("t2") <= F.col("t1") + _TM_WIN))
-    counted = wedges.groupBy("a", "b", "c").agg(F.count(F.lit(1)).alias("n_motifs"))
-    top = Window.orderBy(F.col("n_motifs").desc(), "a", "b", "c")
-    return (
-        counted.withColumn(
-            "kind",
-            F.when(F.col("c") == F.col("a"), F.lit("bounce")).otherwise(
-                F.lit("relay")
-            ),
-        )
-        .withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= _TM_TOPK)
-        .select("a", "b", "c", "kind", "n_motifs", "rk")
-    )
-
-
-def _temporal_motifs_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _TM_RES)
-    return f"""
-        WITH p AS (
-            SELECT user_id,
-                   CAST(FLOOR(epoch_us(ts) / 1000000) AS BIGINT) AS t,
-                   event_id AS e, {cell} AS cell
-            FROM events WHERE user_id < {_TM_POOL}),
-        mv AS (
-            SELECT src, cell AS dst, t FROM (
-                SELECT cell, t,
-                       LAG(cell) OVER (PARTITION BY user_id
-                                       ORDER BY t, e) AS src
-                FROM p)
-            WHERE src IS NOT NULL AND src != cell),
-        wedges AS (
-            SELECT m1.src AS a, m1.dst AS b, m2.dst AS c
-            FROM mv m1 JOIN mv m2
-              ON m2.src = m1.dst
-             AND m2.t > m1.t AND m2.t <= m1.t + {_TM_WIN}),
-        counted AS (
-            SELECT a, b, c, COUNT(*) AS n_motifs
-            FROM wedges GROUP BY 1, 2, 3)
-        SELECT a, b, c, kind, n_motifs, rk FROM (
-            SELECT a, b, c,
-                   CASE WHEN c = a THEN 'bounce' ELSE 'relay' END AS kind,
-                   n_motifs,
-                   CAST(ROW_NUMBER() OVER (ORDER BY n_motifs DESC, a, b, c)
-                        AS BIGINT) AS rk
-            FROM counted)
-        WHERE rk <= {_TM_TOPK}
-    """
-
-
-# ---------------------------------------------------------------------------
-# query clarity score (query-performance prediction) (session 10)
-# ---------------------------------------------------------------------------
-
-_CLARITY_QUERIES = [
-    ("q_vector", ["vector", "merge", "stream"]),
-    ("q_filter", ["filter", "group"]),
-    ("q_scan", ["scan", "join"]),
-]
-_CLARITY_K = 10
-
-
-def q_clarity_score(spark, sf_dir):
-    """Query clarity score (Cronen-Townsend et al. 2002) — the classic
-    query-performance predictor: KL divergence between the language model
-    of the top-k retrieved documents and the corpus LM. A focused query's
-    results share a vocabulary (high clarity); an ambiguous one's results
-    look like the corpus (≈ 0). P(w|Q) = Σ_{d∈top10} P(w|d)/k with uniform
-    result weights (deterministic), P(w|d) = tf/dl and P(w|C) = cf/total —
-    ALL exact integer ratios, so only the ln term touches libm (the
-    bm25/perplexity-proven discipline); per-term 9-dp pre-rounds. One
-    postings table feeds the ranking, the result LMs, and the corpus LM
-    for all three probe queries."""
-    from raptor_service_spark.operators.bm25 import bm25_topk, doc_postings
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    post = doc_postings(docs).localCheckpoint(eager=True)
-    dlen = post.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    corpus = post.groupBy("term").agg(F.sum("tf").alias("cf"))
-    total = post.agg(F.sum("tf").alias("tot"))
-    outs = []
-    for qid, terms in _CLARITY_QUERIES:
-        top = bm25_topk(docs, list(terms), _CLARITY_K).select("doc_id")
-        lm = (
-            top.join(post, "doc_id")
-            .join(dlen, "doc_id")
-            .groupBy("term")
-            .agg(
-                F.round(
-                    F.sum(
-                        F.round(
-                            F.col("tf")
-                            / F.col("dl")
-                            / F.lit(float(_CLARITY_K)),
-                            9,
-                        )
-                    ),
-                    9,
-                ).alias("pwq")
-            )
-        )
-        contrib = (
-            lm.join(corpus, "term")
-            .crossJoin(F.broadcast(total))
-            .select(
-                F.round(
-                    F.col("pwq")
-                    * F.log(
-                        F.col("pwq") / (F.col("cf") / F.col("tot"))
-                    ),
-                    9,
-                ).alias("c")
-            )
-        )
-        outs.append(
-            contrib.agg(
-                F.lit(qid).alias("qid"),
-                F.count(F.lit(1)).alias("n_terms"),
-                F.round(F.sum("c"), 6).alias("clarity"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out.orderBy("qid")
-
-
-def _clarity_score_sql() -> str:
-    from raptor_service_spark.operators.bm25 import TOKEN_PATTERN, bm25_sql
-
-    blocks = []
-    for qid, terms in _CLARITY_QUERIES:
-        kw = bm25_sql("documents", list(terms), _CLARITY_K)
-        blocks.append(
-            f"""
-        SELECT '{qid}' AS qid,
-               CAST(COUNT(*) AS BIGINT) AS n_terms,
-               ROUND(SUM(c), 6) AS clarity
-        FROM (
-            SELECT ROUND(lm.pwq * LN(lm.pwq / (ccorpus.cf
-                       / (SELECT tot FROM ctotal))), 9) AS c
-            FROM (
-                SELECT p.term,
-                       ROUND(SUM(ROUND(p.tf / CAST(d.dl AS DOUBLE)
-                                 / {float(_CLARITY_K)!r}, 9)), 9) AS pwq
-                FROM (SELECT doc_id FROM ({kw})) t
-                JOIN cpost p USING (doc_id)
-                JOIN cdlen d USING (doc_id)
-                GROUP BY p.term) lm
-            JOIN ccorpus USING (term))"""
-        )
-    union = "\n        UNION ALL".join(blocks)
-    # outer CTE names are c-prefixed: bm25_sql nests its own WITH (post,
-    # dlen, ...) inside each block, and shadowed names trip a DuckDB
-    # planner assertion ("recursive CTE scan without recursive CTE node")
-    return f"""
-        WITH cpost AS MATERIALIZED (
-            SELECT doc_id, t.term, COUNT(*) AS tf
-            FROM documents,
-                 unnest(regexp_extract_all(lower(text),
-                        '{TOKEN_PATTERN}', 0)) AS t(term)
-            GROUP BY 1, 2),
-        cdlen AS MATERIALIZED (SELECT doc_id, SUM(tf) AS dl FROM cpost
-                               GROUP BY 1),
-        ccorpus AS MATERIALIZED (SELECT term, SUM(tf) AS cf FROM cpost
-                                 GROUP BY 1),
-        ctotal AS (SELECT CAST(SUM(tf) AS DOUBLE) AS tot FROM cpost)
-        SELECT * FROM ({union}) ORDER BY qid
-    """
-
-
-# ---------------------------------------------------------------------------
-# ROUGE-1/2 overlap scoring of blocked candidate pairs (session 10)
-# ---------------------------------------------------------------------------
-
-_ROUGE_POOL, _ROUGE_WIN, _ROUGE_TOPK = 150, 2, 20
-
-
-def q_rouge_pairs(spark, sf_dir):
-    """ROUGE-1/ROUGE-2 F1 between blocked candidate document pairs — the
-    summary/paraphrase overlap metric (Lin 2004) a curation pipeline uses
-    to grade near-duplicate aggressiveness and summary faithfulness.
-    Candidates come from sorted-neighborhood blocking (normalized text
-    key, each record vs its 2 successors — the snm_pairs O(n·w) posture)
-    over the duplicated corpus; per pair, F1 = 2·overlap/(len_a+len_b)
-    with overlap = Σ_g min(tf_a(g), tf_b(g)) — ALL exact integer ratios,
-    zero float protocol beyond the final exact division. One token agg +
-    one bigram agg feed every pair via two (pair ⋈ grams) joins; planted
-    twins surface at F1 = 1.0."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import tokenize
-
-    d = _docs_with_dups(spark, sf_dir).filter(
-        (F.col("doc_id") % 1000000) < _ROUGE_POOL
-    )
-    key = F.lower(F.substring(F.trim("text"), 1, 24))
-    w = Window.orderBy("key", "doc_id")
-    ranked = d.select("doc_id", key.alias("key")).withColumn(
-        "rn", F.row_number().over(w)
-    ).localCheckpoint(eager=True)
-    a = ranked.select(F.col("doc_id").alias("id_a"), F.col("rn").alias("ra"))
-    b = ranked.select(F.col("doc_id").alias("id_b"), F.col("rn").alias("rb"))
-    pairs = a.join(
-        b,
-        (F.col("rb") > F.col("ra")) & (F.col("rb") <= F.col("ra") + _ROUGE_WIN),
-    ).select("id_a", "id_b")
-    toks = d.select("doc_id", F.explode(tokenize(F.col("text"))).alias("g"))
-    uni = toks.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c"))
-    ulen = uni.groupBy("doc_id").agg(F.sum("c").alias("len"))
-    big = (
-        d.select("doc_id", tokenize(F.col("text")).alias("ws"))
-        .filter(F.size("ws") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 1), "
-                    "i -> concat(ws[i - 1], ' ', ws[i]))"
-                )
-            ).alias("g"),
-        )
-        .groupBy("doc_id", "g")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    blen = big.groupBy("doc_id").agg(F.sum("c").alias("len"))
-
-    def overlap(grams):
-        ga = grams.select(
-            F.col("doc_id").alias("id_a"), "g", F.col("c").alias("ca")
-        )
-        gb = grams.select(
-            F.col("doc_id").alias("id_b"), "g", F.col("c").alias("cb")
-        )
-        return (
-            pairs.join(ga, "id_a")
-            .join(gb, ["id_b", "g"])
-            .groupBy("id_a", "id_b")
-            .agg(F.sum(F.least("ca", "cb")).alias("ov"))
-        )
-    o1 = overlap(uni).withColumnRenamed("ov", "ov1")
-    o2 = overlap(big).withColumnRenamed("ov", "ov2")
-    la1 = ulen.select(F.col("doc_id").alias("id_a"), F.col("len").alias("la1"))
-    lb1 = ulen.select(F.col("doc_id").alias("id_b"), F.col("len").alias("lb1"))
-    la2 = blen.select(F.col("doc_id").alias("id_a"), F.col("len").alias("la2"))
-    lb2 = blen.select(F.col("doc_id").alias("id_b"), F.col("len").alias("lb2"))
-    scored = (
-        pairs.join(o1, ["id_a", "id_b"], "left")
-        .join(o2, ["id_a", "id_b"], "left")
-        .join(la1, "id_a")
-        .join(lb1, "id_b")
-        .join(la2, "id_a", "left")
-        .join(lb2, "id_b", "left")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                (F.lit(2) * F.coalesce("ov1", F.lit(0)))
-                / (F.col("la1") + F.col("lb1")),
-                6,
-            ).alias("rouge1_f"),
-            F.when(
-                (F.coalesce("la2", F.lit(0)) + F.coalesce("lb2", F.lit(0))) > 0,
-                F.round(
-                    (F.lit(2) * F.coalesce("ov2", F.lit(0)))
-                    / (F.coalesce("la2", F.lit(0)) + F.coalesce("lb2", F.lit(0))),
-                    6,
-                ),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("rouge2_f"),
-        )
-    )
-    top = Window.orderBy(
-        F.col("rouge2_f").desc(), F.col("rouge1_f").desc(), "id_a", "id_b"
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= _ROUGE_TOPK)
-        .select("id_a", "id_b", "rouge1_f", "rouge2_f", "rk")
-    )
-
-
-def _rouge_pairs_sql() -> str:
-    from raptor_service_spark.operators.bm25 import TOKEN_PATTERN
-
-    return f"""
-        WITH d AS MATERIALIZED (
-            SELECT doc_id, text FROM {_DOCS_WITH_DUPS_SQL}
-            WHERE doc_id % 1000000 < {_ROUGE_POOL}),
-        ranked AS MATERIALIZED (
-            SELECT doc_id,
-                   ROW_NUMBER() OVER (
-                       ORDER BY lower(substring(trim(text), 1, 24)), doc_id)
-                       AS rn
-            FROM d),
-        pairs AS MATERIALIZED (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM ranked a JOIN ranked b
-              ON b.rn > a.rn AND b.rn <= a.rn + {_ROUGE_WIN}),
-        uni AS MATERIALIZED (
-            SELECT doc_id, t.g, COUNT(*) AS c
-            FROM d, unnest(regexp_extract_all(lower(text),
-                           '{TOKEN_PATTERN}', 0)) AS t(g)
-            GROUP BY 1, 2),
-        ulen AS (SELECT doc_id, SUM(c) AS len FROM uni GROUP BY 1),
-        big AS MATERIALIZED (
-            SELECT doc_id, g, COUNT(*) AS c FROM (
-                SELECT doc_id,
-                       ws[i - 1] || ' ' || ws[i] AS g
-                FROM (SELECT doc_id,
-                             regexp_extract_all(lower(text),
-                                 '{TOKEN_PATTERN}', 0) AS ws
-                      FROM d),
-                     unnest(generate_series(2, len(ws))) AS s(i)
-                WHERE len(ws) >= 2)
-            GROUP BY 1, 2),
-        blen AS (SELECT doc_id, SUM(c) AS len FROM big GROUP BY 1),
-        o1 AS (
-            SELECT p.id_a, p.id_b, SUM(LEAST(ga.c, gb.c)) AS ov
-            FROM pairs p
-            JOIN uni ga ON ga.doc_id = p.id_a
-            JOIN uni gb ON gb.doc_id = p.id_b AND gb.g = ga.g
-            GROUP BY 1, 2),
-        o2 AS (
-            SELECT p.id_a, p.id_b, SUM(LEAST(ga.c, gb.c)) AS ov
-            FROM pairs p
-            JOIN big ga ON ga.doc_id = p.id_a
-            JOIN big gb ON gb.doc_id = p.id_b AND gb.g = ga.g
-            GROUP BY 1, 2),
-        scored AS (
-            SELECT p.id_a, p.id_b,
-                   ROUND(CAST(2 * COALESCE(o1.ov, 0) AS DOUBLE)
-                         / (la1.len + lb1.len), 6) AS rouge1_f,
-                   CASE WHEN COALESCE(la2.len, 0) + COALESCE(lb2.len, 0) > 0
-                        THEN ROUND(CAST(2 * COALESCE(o2.ov, 0) AS DOUBLE)
-                             / (COALESCE(la2.len, 0) + COALESCE(lb2.len, 0)),
-                             6)
-                        ELSE CAST(0.0 AS DOUBLE) END AS rouge2_f
-            FROM pairs p
-            LEFT JOIN o1 ON o1.id_a = p.id_a AND o1.id_b = p.id_b
-            LEFT JOIN o2 ON o2.id_a = p.id_a AND o2.id_b = p.id_b
-            JOIN ulen la1 ON la1.doc_id = p.id_a
-            JOIN ulen lb1 ON lb1.doc_id = p.id_b
-            LEFT JOIN blen la2 ON la2.doc_id = p.id_a
-            LEFT JOIN blen lb2 ON lb2.doc_id = p.id_b)
-        SELECT id_a, id_b, rouge1_f, rouge2_f, rk FROM (
-            SELECT *, CAST(ROW_NUMBER() OVER (
-                       ORDER BY rouge2_f DESC, rouge1_f DESC, id_a, id_b)
-                       AS BIGINT) AS rk
-            FROM scored)
-        WHERE rk <= {_ROUGE_TOPK}
-    """
-
-
-# ---------------------------------------------------------------------------
-# k-truss edge peeling (session 10)
-# ---------------------------------------------------------------------------
-
-
-def q_cell_ktruss(spark, sf_dir):
-    """4-truss of the occupied res-5 document-cell lattice: iterative EDGE
-    peeling by triangle support (every kept edge must sit in ≥ 2
-    triangles among survivors) — strictly stronger cohesion than
-    cell_kcore's degree rule; the community-skeleton extractor. Fixpoint
-    within 4 rounds; the oracle unrolls the identical peel (monotone ⇒
-    early convergence agrees; all-integer). Per round: one degree-bounded
-    triangle enumeration + one count filter
-    (operators/cell_graph.py:ktruss)."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.cell_graph import ktruss
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = d.select(cell_encode_col(lat, lng, _ISO_RES).alias("cell"))
-    return ktruss(occ, res=_ISO_RES, k=4, max_rounds=4)
-
-
-def _cell_ktruss_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import ktruss_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _ISO_RES)
-    return ktruss_sql(
-        f"SELECT {cell} AS cell FROM documents", res=_ISO_RES, k=4, max_rounds=4
-    )
-
-
-# ---------------------------------------------------------------------------
-# Good-Turing smoothing + Chao1 richness + Wilson CTR + SPRT (session 10)
-# ---------------------------------------------------------------------------
-
-_GT_MAX_R, _GT_POOL = 10, 200
-
-
-def _trigram_counts(spark, sf_dir):
-    """(gram, r) trigram frequency table over the bounded doc pool — the
-    n-gram unit where the template corpus actually HAS a rare-count tail
-    (its unigram vocabulary is 31 terms, all frequent), shared by
-    good_turing and chao1_richness."""
-    from raptor_service_spark.operators.bm25 import tokenize
-
-    docs = (
-        _read(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < _GT_POOL)
-        .select("doc_id", "text")
-    )
-    return (
-        docs.select(tokenize(F.col("text")).alias("ws"))
-        .filter(F.size("ws") >= 3)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ws) - 2), "
-                    "i -> concat_ws(' ', ws[i - 1], ws[i], ws[i + 1]))"
-                )
-            ).alias("g")
-        )
-        .groupBy("g")
-        .agg(F.count(F.lit(1)).alias("r"))
-    )
-
-
-def _trigram_counts_sql() -> str:
-    from raptor_service_spark.operators.bm25 import TOKEN_PATTERN
-
-    return f"""(
-        SELECT g, COUNT(*) AS r FROM (
-            SELECT array_to_string(w[i:i + 2], ' ') AS g
-            FROM (SELECT regexp_extract_all(lower(text),
-                         '{TOKEN_PATTERN}', 0) AS w
-                  FROM documents WHERE doc_id < {_GT_POOL}),
-                 unnest(generate_series(1, len(w) - 2)) AS s(i)
-            WHERE len(w) >= 3)
-        GROUP BY 1)"""
-
-
-def q_good_turing(spark, sf_dir):
-    """Good-Turing frequency re-estimation over the pool's TRIGRAM counts
-    — the classical smoothing n-gram LM pipelines apply before trusting
-    raw frequencies: r* = (r+1)·N_{r+1}/N_r from the count-of-counts
-    table (N_r = how many grams occur exactly r times). Everything runs
-    on two nested aggs of the gram table (O(grams) then O(max r) rows);
-    exact integer ratios, r ≤ 10."""
-    cf = _trigram_counts(spark, sf_dir)
-    nr = cf.groupBy("r").agg(F.count(F.lit(1)).alias("n_r"))
-    a = nr.select(F.col("r"), F.col("n_r"))
-    b = nr.select((F.col("r") - 1).alias("r"), F.col("n_r").alias("n_r1"))
-    return (
-        a.join(b, "r", "left")
-        .filter(F.col("r") <= _GT_MAX_R)
-        .select(
-            "r",
-            "n_r",
-            F.round(
-                (F.col("r") + 1) * F.coalesce("n_r1", F.lit(0)) / F.col("n_r"), 6
-            ).alias("r_star"),
-        )
-        .orderBy("r")
-    )
-
-
-def _good_turing_sql() -> str:
-    return f"""
-        WITH post AS {_trigram_counts_sql()},
-        nr AS (SELECT r, COUNT(*) AS n_r FROM post GROUP BY 1)
-        SELECT a.r, a.n_r,
-               ROUND(CAST((a.r + 1) * COALESCE(b.n_r, 0) AS DOUBLE)
-                     / a.n_r, 6) AS r_star
-        FROM nr a LEFT JOIN nr b ON b.r = a.r + 1
-        WHERE a.r <= {_GT_MAX_R}
-        ORDER BY a.r
-    """
-
-
-def q_chao1_richness(spark, sf_dir):
-    """Chao1 species-richness estimate of the pool's TRIGRAM inventory +
-    Good's coverage — "how many distinct grams have we NOT seen yet", the
-    sample-completeness audit next to heaps_law's growth curve: chao1 =
-    D + n₁²/(2n₂) (singletons/doubletons), coverage = 1 − n₁/N. One gram
-    agg + one count-of-counts agg; exact integer arithmetic into two
-    final ratios."""
-    cf = _trigram_counts(spark, sf_dir)
-    return cf.agg(
-        F.count(F.lit(1)).alias("d_obs"),
-        F.sum(F.when(F.col("r") == 1, 1).otherwise(0)).cast("long").alias("n1"),
-        F.sum(F.when(F.col("r") == 2, 1).otherwise(0)).cast("long").alias("n2"),
-        F.sum("r").alias("n_tokens"),
-    ).select(
-        "d_obs",
-        "n1",
-        "n2",
-        F.round(
-            F.col("d_obs")
-            + F.col("n1") * F.col("n1") / (F.lit(2.0) * F.col("n2")),
-            6,
-        ).alias("chao1"),
-        F.round(F.lit(1.0) - F.col("n1") / F.col("n_tokens"), 6).alias(
-            "coverage"
-        ),
-    )
-
-
-def _chao1_richness_sql() -> str:
-    return f"""
-        WITH post AS {_trigram_counts_sql()},
-        s AS (SELECT COUNT(*) AS d_obs,
-                     CAST(SUM(CASE WHEN r = 1 THEN 1 ELSE 0 END) AS BIGINT)
-                         AS n1,
-                     CAST(SUM(CASE WHEN r = 2 THEN 1 ELSE 0 END) AS BIGINT)
-                         AS n2,
-                     SUM(r) AS n_tokens
-              FROM post)
-        SELECT d_obs, n1, n2,
-               ROUND(d_obs + n1 * n1 / (CAST(2.0 AS DOUBLE) * n2), 6)
-                   AS chao1,
-               ROUND(CAST(1.0 AS DOUBLE) - CAST(n1 AS DOUBLE) / n_tokens, 6)
-                   AS coverage
-        FROM s
-    """
-
-
-_WILSON_Z2 = 3.84  # z² at 95% (z = 1.96), an exact decimal literal
-
-
-def q_wilson_ctr(spark, sf_dir):
-    """Wilson-score lower-bound ranking of per-cell conversion rate
-    (purchases out of click+purchase trials) — the small-sample-honest way
-    to rank cells (a raw ratio lets a 1/1 cell beat a 90/100 cell): by the
-    95% lower bound LB = (p̂ + z²/2n − z·√(p̂(1−p̂)/n + z²/4n²))/(1+z²/n).
-    z² = 3.84 as an exact decimal literal, SQRT the only libm call (IEEE-
-    exact); one (cell, type) agg feeds everything. Cells with ≥ 20
-    clicks, top-20 by lower bound."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    counts = (
-        ev.filter(F.col("event_type").isin(["click", "purchase"]))
-        .select(
-            cell_encode_col(lat, lng, 3).alias("cell"),
-            "event_type",
-        )
-        .groupBy("cell")
-        .agg(
-            # trials = all click+purchase events, successes = purchases
-            # (k <= n by construction — the Wilson formula's domain)
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            .cast("long")
-            .alias("k"),
-        )
-        .filter(F.col("n") >= 20)
-    )
-    z2 = F.lit(_WILSON_Z2)
-    p = F.col("k") / F.col("n")
-    n = F.col("n")
-    lb = (
-        p
-        + z2 / (2 * n)
-        - F.sqrt(z2) * F.sqrt(p * (1 - p) / n + z2 / (4 * n * n))
-    ) / (1 + z2 / n)
-    scored = counts.select(
-        "cell",
-        "n",
-        "k",
-        F.round(p, 6).alias("ctr"),
-        (F.floor(lb * 1e6) / 1e6).alias("wilson_lb"),
-    )
-    top = Window.orderBy(F.col("wilson_lb").desc(), "cell")
-    return (
-        scored.withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= 20)
-        .select("cell", "n", "k", "ctr", "wilson_lb", "rk")
-    )
-
-
-def _wilson_ctr_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    z2 = f"CAST({_WILSON_Z2!r} AS DOUBLE)"
-    p = "(CAST(k AS DOUBLE) / n)"
-    lb = (
-        f"(({p} + {z2} / (2 * n) - SQRT({z2}) * SQRT({p} * (1 - {p}) / n "
-        f"+ {z2} / (4 * n * n))) / (1 + {z2} / n))"
-    )
-    return f"""
-        WITH counts AS (
-            SELECT {cell} AS cell,
-                   CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                        END) AS BIGINT) AS k
-            FROM events
-            WHERE event_type IN ('click', 'purchase')
-            GROUP BY 1),
-        ok AS (SELECT * FROM counts WHERE n >= 20),
-        scored AS (
-            SELECT cell, n, k, ROUND({p}, 6) AS ctr,
-                   FLOOR({lb} * 1e6) / 1e6 AS wilson_lb
-            FROM ok)
-        SELECT cell, n, k, ctr, wilson_lb, rk FROM (
-            SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY wilson_lb DESC, cell)
-                           AS BIGINT) AS rk
-            FROM scored)
-        WHERE rk <= 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# SPRT sequential test monitor (session 10)
-# ---------------------------------------------------------------------------
-
-_SPRT_P0, _SPRT_P1, _SPRT_AB = 0.3, 0.5, 0.05
-_SPRT_CELLS, _SPRT_CAP = 3, 2000
-
-
-def _sprt_consts() -> tuple[float, float, float, float]:
-    """LLR increments and decision thresholds, precomputed ONCE in Python
-    (exact double literals shared by both engines — the fold then touches
-    no libm at runtime): win = ln(p1/p0), loss = ln((1−p1)/(1−p0)),
-    A = ln((1−β)/α) accept-H1, B = ln(β/(1−α)) accept-H0."""
-    import math
-
-    w = math.log(_SPRT_P1 / _SPRT_P0)
-    l = math.log((1 - _SPRT_P1) / (1 - _SPRT_P0))
-    a = math.log((1 - _SPRT_AB) / _SPRT_AB)
-    b = math.log(_SPRT_AB / (1 - _SPRT_AB))
-    return w, l, a, b
-
-
-def _sprt_step_expr(ea, arr) -> str:
-    """Wald SPRT fold step from ONE Python source: acc = [llr, decided,
-    decided_at, i]; after a decision the walk freezes (only i advances).
-    llr' substituted textually (no let bindings)."""
-    w, l, a, b = _sprt_consts()
-    llr, dec, dat, i = (ea("acc", k) for k in range(1, 5))
-    z = ea("z", 1)
-    ip = f"({i} + 1.0)"
-    llrp = (
-        f"round({llr} + (CASE WHEN {z} = 1.0 THEN CAST({w!r} AS DOUBLE) "
-        f"ELSE CAST({l!r} AS DOUBLE) END), 9)"
-    )
-    decp = (
-        f"(CASE WHEN {llrp} >= CAST({a!r} AS DOUBLE) THEN 1.0 "
-        f"WHEN {llrp} <= CAST({b!r} AS DOUBLE) THEN -1.0 ELSE 0.0 END)"
-    )
-    return (
-        f"CASE WHEN {dec} != 0.0 THEN {arr([llr, dec, dat, ip])} "
-        f"ELSE {arr([llrp, decp, f'(CASE WHEN {decp} != 0.0 THEN {ip} ELSE 0.0 END)', ip])} END"
-    )
-
-
-def q_sprt_monitor(spark, sf_dir):
-    """Wald's sequential probability ratio test per busy cell — the
-    always-valid A/B monitor (decide H1: purchase share ≥ p1 = 0.5 vs H0:
-    p0 = 0.3 the moment the evidence suffices, instead of waiting for a
-    fixed n): the LLR random walk over the cell's (ts, event_id)-ordered
-    click/purchase outcomes, frozen at the first threshold crossing.
-    LLR increments and the A/B thresholds are Python-precomputed literals
-    (NO runtime libm), so the fold is pure +/CASE arithmetic — ONE
-    ordered array fold per cell (the kalman/holt discipline). 3 busiest
-    cells (scalar-subquery recomputed in the oracle), first 2000
-    outcomes each."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_encode_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.filter(F.col("event_type").isin(["click", "purchase"])).select(
-        cell_encode_col(lat, lng, 3).alias("cell"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        F.col("event_id").alias("e"),
-        F.when(F.col("event_type") == "purchase", 1.0).otherwise(0.0).alias("x"),
-    )
-    top = [
-        r.cell
-        for r in pts.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), "cell")
-        .limit(_SPRT_CELLS)
-        .collect()
-    ]
-    w = Window.partitionBy("cell").orderBy("t", "e")
-    capped = (
-        pts.filter(F.col("cell").isin(top))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _SPRT_CAP)
-    )
-    series = capped.groupBy("cell").agg(
-        F.expr(
-            "transform(sort_array(collect_list(struct(t, e, x))), "
-            "s -> array(s.x))"
-        ).alias("xs")
-    )
-    step = _sprt_step_expr(
-        lambda n, i: f"element_at({n}, {i})",
-        lambda parts: "array(" + ", ".join(parts) + ")",
-    )
-    fold = (
-        "aggregate(xs, "
-        "array(cast(0.0 as double), cast(0.0 as double), "
-        "cast(0.0 as double), cast(0.0 as double)), "
-        f"(acc, z) -> {step})"
-    )
-    out = series.select(
-        "cell", F.size("xs").cast("long").alias("n_obs"), F.expr(fold).alias("st")
-    )
-    return out.select(
-        "cell",
-        "n_obs",
-        (F.floor(F.expr("element_at(st, 1)") * 1e6) / 1e6).alias("final_llr"),
-        F.when(F.expr("element_at(st, 2)") == 1.0, F.lit("accept_h1"))
-        .when(F.expr("element_at(st, 2)") == -1.0, F.lit("accept_h0"))
-        .otherwise(F.lit("undecided"))
-        .alias("decision"),
-        F.expr("element_at(st, 3)").cast("long").alias("decided_at"),
-    ).orderBy("cell")
-
-
-def _sprt_monitor_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    step = _sprt_step_expr(
-        lambda n, i: f"{n}[{i}]",
-        lambda parts: "[" + ", ".join(parts) + "]",
-    )
-    fold = (
-        "list_reduce(list_prepend("
-        "[CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE), "
-        "CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE)], xs), "
-        f"(acc, z) -> {step})"
-    )
-    top = (
-        f"(SELECT cell FROM (SELECT cell, COUNT(*) AS c FROM p "
-        f"GROUP BY 1 ORDER BY c DESC, cell LIMIT {_SPRT_CELLS}))"
-    )
-    return f"""
-        WITH p AS (
-            SELECT {cell} AS cell, epoch_us(ts) AS t, event_id AS e,
-                   CASE WHEN event_type = 'purchase'
-                        THEN CAST(1.0 AS DOUBLE)
-                        ELSE CAST(0.0 AS DOUBLE) END AS x
-            FROM events
-            WHERE event_type IN ('click', 'purchase')),
-        capped AS (
-            SELECT cell, t, e, x FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY cell
-                          ORDER BY t, e) AS rn
-                FROM p WHERE cell IN {top})
-            WHERE rn <= {_SPRT_CAP}),
-        ser AS (
-            SELECT cell,
-                   list_transform(list_sort(list({{'t': t, 'e': e, 'x': x}})),
-                                  s -> [s.x]) AS xs
-            FROM capped GROUP BY cell),
-        st AS (SELECT cell, CAST(len(xs) AS BIGINT) AS n_obs,
-                      {fold} AS s
-               FROM ser)
-        SELECT cell, n_obs,
-               FLOOR(s[1] * 1e6) / 1e6 AS final_llr,
-               CASE WHEN s[2] = 1.0 THEN 'accept_h1'
-                    WHEN s[2] = -1.0 THEN 'accept_h0'
-                    ELSE 'undecided' END AS decision,
-               CAST(s[3] AS BIGINT) AS decided_at
-        FROM st ORDER BY cell
-    """
-
-
-# ---------------------------------------------------------------------------
-# PPR sweep cut (local clustering) + rich-club coefficient (session 10)
-# ---------------------------------------------------------------------------
-
-_SWEEP_MAXK, _SWEEP_TOP = 50, 5
-
-
-def q_ppr_sweep_cut(spark, sf_dir):
-    """Local graph clustering by PPR sweep cut (Andersen-Chung-Lang 2006):
-    rank cells by personalized-PageRank-over-degree from the hub seed,
-    then find the prefix with minimum conductance φ(S) =
-    cut(S)/min(vol(S), vol(V∖S)) — the hub's natural community boundary.
-    The sweep is fully relational: every directed edge contributes +cnt
-    at rank min(ru,rv) and −cnt at rank max(ru,rv), so cut(k) is ONE
-    prefix-sum window over the delta table (no per-prefix rescan);
-    volumes are a second cumsum. All-integer cut/vol → exact conductance
-    ratios. Prefixes 2..50; top-5 lowest φ."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.cell_graph import ppr
-
-    edges = (
-        _od_cell_edges(spark, sf_dir)
-        .withColumn("w", F.col("cnt").cast("double"))
-        .localCheckpoint(eager=True)
-    )
-    seed = (
-        edges.groupBy("dst")
-        .agg(F.sum("cnt").alias("deg"))
-        .orderBy(F.col("deg").desc(), F.col("dst").asc())
-        .limit(1)
-        .collect()[0]["dst"]
-    )
-    scores = ppr(edges, seed=seed, n_iters=5, damping=0.85)
-    deg = (
-        edges.select(F.col("src").alias("cell"), "cnt")
-        .unionByName(edges.select(F.col("dst").alias("cell"), "cnt"))
-        .groupBy("cell")
-        .agg(F.sum("cnt").alias("deg"))
-    )
-    ranked = (
-        scores.join(deg, "cell")
-        .withColumn("score", F.col("pr") / F.col("deg"))
-        .withColumn(
-            "rn",
-            F.row_number().over(Window.orderBy(F.col("score").desc(), "cell")),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ru = ranked.select(F.col("cell").alias("src"), F.col("rn").alias("ru"))
-    rv = ranked.select(F.col("cell").alias("dst"), F.col("rn").alias("rv"))
-    espan = edges.join(ru, "src").join(rv, "dst")
-    deltas = (
-        espan.select(
-            F.least("ru", "rv").alias("k"), F.col("cnt").alias("d")
-        )
-        .unionByName(
-            espan.select(
-                F.greatest("ru", "rv").alias("k"), (-F.col("cnt")).alias("d")
-            )
-        )
-        .groupBy("k")
-        .agg(F.sum("d").alias("d"))
-    )
-    wk = Window.orderBy("rn").rowsBetween(Window.unboundedPreceding, 0)
-    sweep = (
-        ranked.join(deltas, ranked.rn == deltas.k, "left")
-        .select("rn", "deg", F.coalesce("d", F.lit(0)).alias("d"))
-        .withColumn("cut", F.sum("d").over(wk).cast("long"))
-        .withColumn("vol", F.sum("deg").over(wk).cast("long"))
-        .withColumn("tot", F.sum("deg").over(Window.partitionBy()).cast("long"))
-        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy()))
-    )
-    scored = sweep.filter(
-        (F.col("rn") >= 2)
-        & (F.col("rn") <= _SWEEP_MAXK)
-        & (F.col("rn") <= F.col("n") - 2)
-    ).select(
-        F.col("rn").alias("k"),
-        "cut",
-        F.col("vol").alias("vol_s"),
-        F.round(
-            F.col("cut") / F.least("vol", F.col("tot") - F.col("vol")), 6
-        ).alias("conductance"),
-    )
-    top = Window.orderBy("conductance", "k")
-    return (
-        scored.withColumn("rk", F.row_number().over(top).cast("long"))
-        .filter(F.col("rk") <= _SWEEP_TOP)
-        .select("k", "cut", "vol_s", "conductance", "rk")
-    )
-
-
-def _ppr_sweep_cut_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import ppr_sql
-
-    seed = (
-        "(SELECT dst FROM e GROUP BY dst "
-        "ORDER BY SUM(cnt) DESC, dst ASC LIMIT 1)"
-    )
-    edges = (
-        f"SELECT src, dst, cnt, CAST(cnt AS DOUBLE) AS w "
-        f"FROM ({_od_cell_edges_sql()})"
-    )
-    inner = ppr_sql(edges, seed=seed, n_iters=5, damping=0.85)
-    return f"""
-        WITH scores AS ({inner}),
-        e2 AS MATERIALIZED ({_od_cell_edges_sql()}),
-        deg AS (SELECT cell, SUM(cnt) AS deg FROM (
-                    SELECT src AS cell, cnt FROM e2
-                    UNION ALL SELECT dst, cnt FROM e2)
-                GROUP BY 1),
-        ranked AS MATERIALIZED (
-            SELECT s.cell, d.deg,
-                   ROW_NUMBER() OVER (ORDER BY s.pr / d.deg DESC, s.cell)
-                       AS rn
-            FROM scores s JOIN deg d ON s.cell = d.cell),
-        espan AS (
-            SELECT LEAST(ru.rn, rv.rn) AS lo, GREATEST(ru.rn, rv.rn) AS hi,
-                   e2.cnt
-            FROM e2 JOIN ranked ru ON e2.src = ru.cell
-                    JOIN ranked rv ON e2.dst = rv.cell),
-        deltas AS (
-            SELECT k, SUM(d) AS d FROM (
-                SELECT lo AS k, cnt AS d FROM espan
-                UNION ALL SELECT hi, -cnt FROM espan)
-            GROUP BY 1),
-        sweep AS (
-            SELECT r.rn,
-                   CAST(SUM(COALESCE(dl.d, 0)) OVER (ORDER BY r.rn)
-                        AS BIGINT) AS cut,
-                   CAST(SUM(r.deg) OVER (ORDER BY r.rn) AS BIGINT) AS vol,
-                   CAST(SUM(r.deg) OVER () AS BIGINT) AS tot,
-                   COUNT(*) OVER () AS n
-            FROM ranked r LEFT JOIN deltas dl ON dl.k = r.rn)
-        SELECT k, cut, vol_s, conductance, rk FROM (
-            SELECT rn AS k, cut, vol AS vol_s,
-                   ROUND(CAST(cut AS DOUBLE)
-                         / LEAST(vol, tot - vol), 6) AS conductance,
-                   CAST(ROW_NUMBER() OVER (ORDER BY
-                        ROUND(CAST(cut AS DOUBLE) / LEAST(vol, tot - vol), 6),
-                        rn) AS BIGINT) AS rk
-            FROM sweep
-            WHERE rn >= 2 AND rn <= {_SWEEP_MAXK} AND rn <= n - 2)
-        WHERE rk <= {_SWEEP_TOP}
-    """
-
-
-_RC_KS = [3, 5, 8]
-
-
-def q_rich_club(spark, sf_dir):
-    """Rich-club coefficient of the res-4 occupied lattice: φ(k) =
-    E_{>k} / (N_{>k}·(N_{>k}−1)) over DIRECTED edges among nodes of
-    degree > k — do the hubs preferentially interconnect? (Colizza 2006;
-    the hub-wiring audit next to degree_assortativity's global mixing.)
-    One degree agg + one edge semi-join per k (3 literal thresholds);
-    all-integer counts into exact ratios."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.cell_graph import _adjacency
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = d.select(cell_encode_col(lat, lng, 4).alias("cell")).distinct()
-    occ = occ.localCheckpoint(eager=True)
-    edges = _adjacency(occ, 4).localCheckpoint(eager=True)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    outs = []
-    for k in _RC_KS:
-        rich = deg.filter(F.col("deg") > k).select("src")
-        n = rich.count()
-        e = (
-            edges.join(rich, "src")
-            .join(rich.select(F.col("src").alias("dst")), "dst")
-            .count()
-        )
-        # floor-truncation, not Python round (half-to-even) — mirrors the
-        # oracle's FLOOR(x*1e6)/1e6 on the identical double
-        import math
-
-        phi = math.floor(e / (n * (n - 1)) * 1e6) / 1e6 if n >= 2 else 0.0
-        outs.append((k, n, e, phi))
-    return spark.createDataFrame(
-        outs, "k long, n_rich long, e_rich long, phi double"
-    ).orderBy("k")
-
-
-def _rich_club_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import _RING
-
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    nbr = kring_neighbor_sql("o.cell", 4, "v.dx", "v.dy")
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _RING)
-    blocks = []
-    for k in _RC_KS:
-        blocks.append(
-            f"""
-        SELECT CAST({k} AS BIGINT) AS k,
-               (SELECT COUNT(*) FROM deg WHERE deg > {k}) AS n_rich,
-               CAST(COUNT(*) AS BIGINT) AS e_rich,
-               CASE WHEN (SELECT COUNT(*) FROM deg WHERE deg > {k}) >= 2
-                    THEN FLOOR(CAST(COUNT(*) AS DOUBLE)
-                         / ((SELECT COUNT(*) FROM deg WHERE deg > {k})
-                            * ((SELECT COUNT(*) FROM deg WHERE deg > {k})
-                               - 1)) * 1e6) / 1e6
-                    ELSE CAST(0.0 AS DOUBLE) END AS phi
-        FROM e
-        WHERE src IN (SELECT src FROM deg WHERE deg > {k})
-          AND dst IN (SELECT src FROM deg WHERE deg > {k})"""
-        )
-    union = "\n        UNION ALL".join(blocks)
-    return f"""
-        WITH occ AS (SELECT DISTINCT {cell} AS cell FROM documents),
-        e AS MATERIALIZED (
-            SELECT o.cell AS src, {nbr} AS dst
-            FROM occ o CROSS JOIN (VALUES {offs}) v(dx, dy)
-            WHERE {nbr} IS NOT NULL
-              AND {nbr} IN (SELECT cell FROM occ)),
-        deg AS MATERIALIZED (
-            SELECT src, COUNT(*) AS deg FROM e GROUP BY 1)
-        SELECT * FROM ({union}) ORDER BY k
-    """
-
-
-# ---------------------------------------------------------------------------
-# randomized response (local DP) + bivariate Moran (session 10)
-# ---------------------------------------------------------------------------
-
-_RR_Q = 0.3
-
-
-def q_randomized_response(spark, sf_dir):
-    """Warner's randomized response — the LOCAL-DP collection primitive
-    next to dp_cell_counts' central-DP release: each user reports whether
-    they ever purchased, but flips the answer with probability q = 0.3
-    (coin = md5 of the user id — the seeded-mechanism replay discipline);
-    the collector debiases p̂ = (p_obs − q)/(1 − 2q). The query audits the
-    whole mechanism: true proportion (computable here), observed noisy
-    proportion, debiased estimate, and |error| — all exact integer counts
-    into exact-ratio arithmetic (q an exact decimal literal)."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "event_type")
-    users = ev.groupBy("user_id").agg(
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-            "truth"
-        )
-    )
-    coin = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("rr|"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    reported = users.select(
-        "truth",
-        F.when(coin < F.lit(int(_RR_Q * 100)), 1 - F.col("truth"))
-        .otherwise(F.col("truth"))
-        .alias("resp"),
-    )
-    agg = reported.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum("truth").cast("long").alias("n_true"),
-        F.sum("resp").cast("long").alias("n_resp"),
-    )
-    p_true = F.col("n_true") / F.col("n_users")
-    p_obs = F.col("n_resp") / F.col("n_users")
-    est = (p_obs - F.lit(_RR_Q)) / F.lit(1.0 - 2 * _RR_Q)
-    return agg.select(
-        "n_users",
-        F.round(p_true, 6).alias("true_p"),
-        F.round(p_obs, 6).alias("obs_p"),
-        F.round(est, 6).alias("est_p"),
-        F.round(F.abs(est - p_true), 6).alias("abs_err"),
-    )
-
-
-def _randomized_response_sql() -> str:
-    q = _RR_Q
-    return f"""
-        WITH users AS (
-            SELECT user_id,
-                   MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                       AS truth
-            FROM events GROUP BY 1),
-        rep AS (
-            SELECT truth,
-                   CASE WHEN ('0x' || substr(md5('rr|'
-                              || CAST(user_id AS VARCHAR)), 1, 8))::BIGINT
-                             % 100 < {int(q * 100)}
-                        THEN 1 - truth ELSE truth END AS resp
-            FROM users),
-        a AS (SELECT COUNT(*) AS n_users,
-                     CAST(SUM(truth) AS BIGINT) AS n_true,
-                     CAST(SUM(resp) AS BIGINT) AS n_resp
-              FROM rep)
-        SELECT n_users,
-               ROUND(CAST(n_true AS DOUBLE) / n_users, 6) AS true_p,
-               ROUND(CAST(n_resp AS DOUBLE) / n_users, 6) AS obs_p,
-               ROUND((CAST(n_resp AS DOUBLE) / n_users - CAST({q!r} AS DOUBLE))
-                     / CAST({1.0 - 2 * q!r} AS DOUBLE), 6) AS est_p,
-               ROUND(ABS((CAST(n_resp AS DOUBLE) / n_users
-                          - CAST({q!r} AS DOUBLE))
-                         / CAST({1.0 - 2 * q!r} AS DOUBLE)
-                         - CAST(n_true AS DOUBLE) / n_users), 6) AS abs_err
-        FROM a
-    """
-
-
-def q_bivariate_moran(spark, sf_dir):
-    """Bivariate (cross) Moran's I between the DOCUMENT density surface
-    and the EVENT density surface at res 5 — do events concentrate where
-    documents do, spatially smoothed by the queen 1-ring? (Wartenberg's
-    I_xy: z-cross-products over neighbor pairs, normalized by both
-    variances.) The cross-table twin of morans_i: one count agg per
-    table, a full-outer cell join (missing side = 0 — the honest grid),
-    ONE ring join over the union of occupied cells; round-6 display per
-    the morans_i float discipline."""
-    from raptor_service_spark.geo.grid import cell_encode_col
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_col
-    from raptor_service_spark.operators.cell_graph import _RING
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat_d, lng_d = _latlng_cols(F.col("doc_id"))
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat_e, lng_e = _latlng_cols(F.col("event_id"))
-    dc = d.groupBy(cell_encode_col(lat_d, lng_d, 5).alias("cell")).agg(
-        F.count(F.lit(1)).cast("double").alias("x")
-    )
-    ec = ev.groupBy(cell_encode_col(lat_e, lng_e, 5).alias("cell")).agg(
-        F.count(F.lit(1)).cast("double").alias("y")
-    )
-    c = (
-        dc.join(ec, "cell", "full_outer")
-        .select(
-            "cell",
-            F.coalesce("x", F.lit(0.0)).alias("x"),
-            F.coalesce("y", F.lit(0.0)).alias("y"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    stats = c.agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        F.avg("x").alias("mx"),
-        F.avg("y").alias("my"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum("y").alias("sy"),
-    )
-    nbrs = F.array(
-        *[kring_neighbor_col("cell", 5, dx, dy) for dx, dy in _RING]
-    )
-    p = c.select(
-        "cell", "x", F.explode(F.filter(nbrs, lambda v: v.isNotNull())).alias("nbr")
-    )
-    j = p.join(
-        c.select(F.col("cell").alias("nbr"), F.col("y").alias("nbr_y")), "nbr"
-    ).crossJoin(F.broadcast(stats))
-    vx = F.max(F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n_cells"))
-    vy = F.max(F.col("syy") - F.col("sy") * F.col("sy") / F.col("n_cells"))
-    return j.agg(
-        F.max("n_cells").alias("n_cells"),
-        F.count(F.lit(1)).alias("s0"),
-        F.round(
-            (F.max("n_cells") / F.count(F.lit(1)))
-            * F.sum((F.col("x") - F.col("mx")) * (F.col("nbr_y") - F.col("my")))
-            / F.sqrt(vx * vy),
-            6,
-        ).alias("moran_xy"),
-    )
-
-
-def _bivariate_moran_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import _RING
-
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat_d, lng_d = _latlng_sql("doc_id")
-    lat_e, lng_e = _latlng_sql("event_id")
-    cell_d = cell_encode_sql(lat_d, lng_d, 5)
-    cell_e = cell_encode_sql(lat_e, lng_e, 5)
-    nbr = kring_neighbor_sql("c.cell", 5, "o.dx", "o.dy")
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _RING)
-    return f"""
-        WITH dc AS (SELECT {cell_d} AS cell, CAST(COUNT(*) AS DOUBLE) AS x
-                    FROM documents GROUP BY 1),
-        ec AS (SELECT {cell_e} AS cell, CAST(COUNT(*) AS DOUBLE) AS y
-               FROM events GROUP BY 1),
-        c AS MATERIALIZED (
-            SELECT COALESCE(dc.cell, ec.cell) AS cell,
-                   COALESCE(dc.x, 0.0) AS x, COALESCE(ec.y, 0.0) AS y
-            FROM dc FULL OUTER JOIN ec ON dc.cell = ec.cell),
-        s AS (SELECT COUNT(*) AS n_cells, AVG(x) AS mx, AVG(y) AS my,
-                     SUM(x * x) AS sxx, SUM(x) AS sx,
-                     SUM(y * y) AS syy, SUM(y) AS sy
-              FROM c),
-        p AS (SELECT c.cell, c.x, {nbr} AS nbr
-              FROM c CROSS JOIN (VALUES {offs}) o(dx, dy)
-              WHERE {nbr} IS NOT NULL),
-        j AS (SELECT p.x, c2.y AS nbr_y FROM p JOIN c c2 ON p.nbr = c2.cell)
-        SELECT s.n_cells AS n_cells, COUNT(*) AS s0,
-               ROUND((s.n_cells / CAST(COUNT(*) AS DOUBLE))
-                     * SUM((j.x - s.mx) * (j.nbr_y - s.my))
-                     / SQRT((s.sxx - s.sx * s.sx / s.n_cells)
-                            * (s.syy - s.sy * s.sy / s.n_cells)), 6)
-                   AS moran_xy
-        FROM j CROSS JOIN s
-        GROUP BY s.n_cells, s.mx, s.my, s.sxx, s.sx, s.syy, s.sy
-    """
-
-
-# ---------------------------------------------------------------------------
-# ordinary kriging at query targets (session 11)
-# ---------------------------------------------------------------------------
-
-_KRIG_TARGETS = {"t1": (12.0, 30.0), "t2": (-25.0, -100.0), "t3": (48.0, 110.0)}
-
-
-def _krig_det3(a) -> str:
-    return (
-        f"({a[0][0]} * ({a[1][1]} * {a[2][2]} - {a[1][2]} * {a[2][1]})"
-        f" - {a[0][1]} * ({a[1][0]} * {a[2][2]} - {a[1][2]} * {a[2][0]})"
-        f" + {a[0][2]} * ({a[1][0]} * {a[2][1]} - {a[1][1]} * {a[2][0]}))"
-    )
-
-
-def _krig_det4(m) -> str:
-    s = ""
-    for j in range(4):
-        minor = [[m[r][c] for c in range(4) if c != j] for r in range(1, 4)]
-        sign = ("" if j == 0 else " + ") if j % 2 == 0 else " - "
-        s += f"{sign}{m[0][j]} * {_krig_det3(minor)}"
-    return f"({s})"
-
-
-def _krig_exprs() -> tuple[dict[str, str], dict[str, str]]:
-    """Ordinary-kriging solve (k=3 neighbors, linear variogram γ(h)=h) as
-    ONE set of generated Cramer-expansion strings over named columns,
-    evaluated VERBATIM by both engines — floats bit-identical by
-    construction (the dtw_levels technique). Inputs: g1..g3 (target→
-    neighbor distances, 6 dp), g12/g13/g23 (pairwise neighbor distances,
-    6 dp). Returns (determinant layer, weight layer)."""
-    A = [
-        ["0.0", "g12", "g13", "1.0"],
-        ["g12", "0.0", "g23", "1.0"],
-        ["g13", "g23", "0.0", "1.0"],
-        ["1.0", "1.0", "1.0", "0.0"],
-    ]
-    b = ["g1", "g2", "g3", "1.0"]
-    dets = {"det": _krig_det4(A)}
-    wts = {}
-    for i, name in enumerate(["w1", "w2", "w3", "mu"]):
-        Ai = [[b[r] if c == i else A[r][c] for c in range(4)] for r in range(4)]
-        dets[f"d_{name}"] = _krig_det4(Ai)
-        wts[name] = f"(d_{name} / det)"
-    return dets, wts
-
-
-def q_kriging_ordinary(spark, sf_dir):
-    """Ordinary kriging of the event `value` field at 3 query targets —
-    the BLUE spatial interpolator (vs the heuristic IDW twin): per target,
-    the 3 exact nearest sample sites (ring-doubling kNN, one site per
-    position — duplicate sites would make the variogram matrix singular),
-    then the 4×4 ordinary-kriging system [γ_ij 1; 1 0][w;μ]=[γ_i0;1] under
-    a linear variogram γ(h)=h, solved by a GENERATED Cramer expansion that
-    both engines evaluate verbatim (dtw_levels technique — bit-identical
-    floats, no per-step rounding needed). Scale shape: site dedup is one
-    window; the kNN is the occupancy-planned ring join (never target ×
-    sites); the solve itself is O(targets) codegen arithmetic. Outputs the
-    estimate AND the kriging variance (the honesty term IDW cannot give).
-    Reference analog: retrieval_service score interpolation over cluster
-    summaries (services/retrieval_service.py) recast as geostatistics."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.geo_knn import geo_knn_join
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    w = Window.partitionBy("lat", "lng").orderBy("event_id")
-    sites = (
-        pts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    knn = geo_knn_join(
-        sites,
-        _KRIG_TARGETS,
-        k=3,
-        res=6,
-        payload_cols=("event_id", "value", "lat", "lng"),
-    )
-    nb = knn.groupBy("qid").agg(
-        F.array_sort(
-            F.collect_list(F.struct("dist", "event_id", "lng", "lat", "value"))
-        ).alias("nb")
-    )
-    cols = {}
-    for i in (1, 2, 3):
-        el = F.element_at(F.col("nb"), i)
-        cols[f"x{i}"] = el["lng"]
-        cols[f"y{i}"] = el["lat"]
-        cols[f"z{i}"] = el["value"]
-        cols[f"g{i}"] = el["dist"]
-    nb = nb.withColumns(cols)
-    pw = {}
-    for i, j in ((1, 2), (1, 3), (2, 3)):
-        dx = F.col(f"x{i}") - F.col(f"x{j}")
-        dy = F.col(f"y{i}") - F.col(f"y{j}")
-        pw[f"g{i}{j}"] = F.round(F.sqrt(dx * dx + dy * dy), 6)
-    nb = nb.withColumns(pw)
-    dets, wts = _krig_exprs()
-    nb = nb.withColumns({k: F.expr(v) for k, v in dets.items()})
-    nb = nb.withColumns({k: F.expr(v) for k, v in wts.items()})
-    return nb.select(
-        "qid",
-        F.round(F.expr("w1 * z1 + w2 * z2 + w3 * z3"), 6).alias("krig_est"),
-        F.round(F.expr("w1 * g1 + w2 * g2 + w3 * g3 + mu"), 6).alias("krig_var"),
-    ).orderBy("qid")
-
-
-def _kriging_ordinary_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    centers = ", ".join(
-        f"('{q}', {la!r}, {ln!r})" for q, (la, ln) in _KRIG_TARGETS.items()
-    )
-    nb_cols = []
-    for i in (1, 2, 3):
-        for src, dst in (("lng", "x"), ("lat", "y"), ("value", "z"), ("dist", "g")):
-            nb_cols.append(f"MAX(CASE WHEN rn2 = {i} THEN {src} END) AS {dst}{i}")
-    pw = ", ".join(
-        f"ROUND(SQRT((x{i} - x{j}) * (x{i} - x{j})"
-        f" + (y{i} - y{j}) * (y{i} - y{j})), 6) AS g{i}{j}"
-        for i, j in ((1, 2), (1, 3), (2, 3))
-    )
-    dets, wts = _krig_exprs()
-    det_sel = ", ".join(f"{v} AS {k}" for k, v in dets.items())
-    wt_sel = ", ".join(f"{v} AS {k}" for k, v in wts.items())
-    return f"""
-        WITH p0 AS (SELECT event_id, value, {lat} AS lat, {lng} AS lng
-                    FROM events),
-        p AS (SELECT event_id, value, lat, lng FROM (
-                  SELECT *, ROW_NUMBER() OVER (PARTITION BY lat, lng
-                                               ORDER BY event_id) AS rn
-                  FROM p0) WHERE rn = 1),
-        c(qid, clat, clng) AS (VALUES {centers}),
-        d AS (SELECT qid, event_id, value, lat, lng,
-                     ROUND(SQRT((lat - clat) * (lat - clat)
-                              + (lng - clng) * (lng - clng)), 6) AS dist
-              FROM p CROSS JOIN c),
-        r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
-                                           ORDER BY dist, event_id) AS rn2
-              FROM d),
-        nb AS (SELECT qid, {', '.join(nb_cols)}
-               FROM r WHERE rn2 <= 3 GROUP BY qid),
-        gm AS (SELECT *, {pw} FROM nb),
-        dets AS (SELECT *, {det_sel} FROM gm),
-        wts AS (SELECT *, {wt_sel} FROM dets)
-        SELECT qid,
-               ROUND(w1 * z1 + w2 * z2 + w3 * z3, 6) AS krig_est,
-               ROUND(w1 * g1 + w2 * g2 + w3 * g3 + mu, 6) AS krig_var
-        FROM wts ORDER BY qid
-    """
-
-
-# ---------------------------------------------------------------------------
-# empty-space F-function (session 11)
-# ---------------------------------------------------------------------------
-
-_FF_BANDS = [0.25, 0.5, 1.0, 2.0, 4.0]
-_FF_NLAT, _FF_NLNG = 18, 20
-
-
-def q_f_function(spark, sf_dir):
-    """Empty-space function F(d) — the ECDF of nearest-EVENT distance from
-    a deterministic 18×20 reference grid (the point-pattern complement of
-    the G-function: G samples the pattern, F samples the empty space; F
-    below the CSR curve ⇔ clustered). NN distances come from the exact
-    query→data ring-doubling join (`nn_join` — `nn_distances` generalized
-    to separate query/data tables); the band evaluation is one broadcast
-    ladder over the 360-row NN table. Scale shape: each round shuffles
-    only unresolved grid points × cover cells against the cell-keyed
-    event table — never grid × events."""
-    from raptor_service_spark.operators.geo_knn import nn_join
-
-    g = spark.range(0, _FF_NLAT * _FF_NLNG).select(
-        F.col("id").alias("pid"),
-        (F.lit(-171.0) + (F.col("id") % _FF_NLNG).cast("double") * F.lit(18.0)).alias(
-            "px"
-        ),
-        (
-            F.lit(-81.0) + F.floor(F.col("id") / _FF_NLNG).cast("double") * F.lit(9.0)
-        ).alias("py"),
-    )
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    data = ev.select(F.col("event_id").alias("did"), lng.alias("dx"), lat.alias("dy"))
-    nn = nn_join(g, data, res=4, max_ring=64)
-    bands = spark.createDataFrame([(b,) for b in _FF_BANDS], "band double")
-    return (
-        nn.crossJoin(F.broadcast(bands))
-        .groupBy("band")
-        .agg(
-            F.sum((F.col("d1") <= F.col("band")).cast("long")).alias("n_le"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "band",
-            "n_le",
-            "n",
-            F.round(F.col("n_le") / F.col("n").cast("double"), 6).alias("f"),
-        )
-        .orderBy("band")
-    )
-
-
-def _f_function_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    bands = ", ".join(f"({b!r})" for b in _FF_BANDS)
-    return f"""
-        WITH g AS (SELECT i * {_FF_NLNG} + j AS pid,
-                          CAST(-171.0 + j * 18.0 AS DOUBLE) AS px,
-                          CAST(-81.0 + i * 9.0 AS DOUBLE) AS py
-                   FROM (SELECT unnest(range({_FF_NLAT})) AS i)
-                   CROSS JOIN (SELECT unnest(range({_FF_NLNG})) AS j)),
-        p AS (SELECT {lng} AS dx, {lat} AS dy FROM events),
-        d AS (SELECT g.pid,
-                     MIN(SQRT((g.px - p.dx) * (g.px - p.dx)
-                            + (g.py - p.dy) * (g.py - p.dy))) AS d1
-              FROM g CROSS JOIN p GROUP BY 1)
-        SELECT band, CAST(SUM(CAST(d1 <= band AS INT)) AS BIGINT) AS n_le,
-               COUNT(*) AS n,
-               ROUND(SUM(CAST(d1 <= band AS INT)) / CAST(COUNT(*) AS DOUBLE), 6)
-                   AS f
-        FROM d CROSS JOIN (SELECT CAST(band AS DOUBLE) AS band
-                           FROM (VALUES {bands}) t(band)) b
-        GROUP BY band
-        ORDER BY band
-    """
-
-
-# ---------------------------------------------------------------------------
-# RAKE keyword extraction (session 11)
-# ---------------------------------------------------------------------------
-
-_RAKE_STOP = ("the", "a", "an", "of", "to", "in", "and", "is", "it", "that")
-_RAKE_TOPK = 20
-
-
-def q_rake_keywords(spark, sf_dir):
-    """RAKE keyword extraction (Rose et al. 2010) over the corpus: candidate
-    phrases are maximal stopword-free token runs (gaps-and-islands: position
-    minus row-number within the non-stop stream), word score = deg/freq
-    where deg sums the lengths of phrases a word appears in, phrase score =
-    Σ word scores. Scores are EXACT integer nano-units ((deg·10⁹) div freq,
-    summed as BIGINT) so cross-engine parity needs no float protocol at
-    all. Scale shape: one explode + two hash aggs + one bounded join
-    (distinct words), one top-k; never doc × doc. The unsupervised keyword
-    leg a tile-level `cell_top_terms` faceting UI would call."""
-    from pyspark.sql import Window
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = d.select(
-        "doc_id",
-        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("p", "w"),
-    ).filter(F.col("w") != "")
-    ns = toks.filter(~F.col("w").isin(*_RAKE_STOP))
-    wgrp = Window.partitionBy("doc_id").orderBy("p")
-    ns = ns.withColumn("grp", F.col("p") - F.row_number().over(wgrp))
-    occ = ns.withColumn(
-        "len", F.count(F.lit(1)).over(Window.partitionBy("doc_id", "grp"))
-    )
-    wstats = occ.groupBy("w").agg(
-        F.count(F.lit(1)).alias("freq"), F.sum("len").alias("deg")
-    )
-    wscore = wstats.select(
-        "w", F.expr("(deg * 1000000000L) div freq").alias("nanos")
-    )
-    inst = (
-        occ.join(wscore, "w")
-        .groupBy("doc_id", "grp")
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("p", "w"))),
-                    lambda s: s["w"],
-                ),
-            ).alias("phrase"),
-            F.max("len").alias("n_words"),
-            F.sum("nanos").alias("nanos"),
-        )
-    )
-    return (
-        inst.groupBy("phrase")
-        .agg(
-            F.max("n_words").alias("n_words"),
-            F.count(F.lit(1)).alias("n_occ"),
-            F.round(F.max("nanos") / F.lit(1000000000.0), 6).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), "phrase")
-        .limit(_RAKE_TOPK)
-    )
-
-
-def _rake_keywords_sql() -> str:
-    stop = ", ".join(f"'{w}'" for w in _RAKE_STOP)
-    return f"""
-        WITH t AS (SELECT doc_id,
-                          regexp_split_to_array(trim(text), '\\s+') AS arr
-                   FROM documents),
-        toks AS (SELECT doc_id, u.p, u.w
-                 FROM (SELECT doc_id,
-                              UNNEST(list_transform(range(1, len(arr) + 1),
-                                  i -> struct_pack(p := i - 1, w := arr[i])))
-                                  AS u
-                       FROM t)
-                 WHERE u.w != ''),
-        ns AS (SELECT doc_id, p, w,
-                      p - ROW_NUMBER() OVER (PARTITION BY doc_id
-                                             ORDER BY p) AS grp
-               FROM toks WHERE w NOT IN ({stop})),
-        occ AS (SELECT doc_id, grp, p, w,
-                       COUNT(*) OVER (PARTITION BY doc_id, grp) AS len
-                FROM ns),
-        ws AS (SELECT w, (SUM(len) * 1000000000) // COUNT(*) AS nanos
-               FROM occ GROUP BY 1),
-        inst AS (SELECT occ.doc_id, occ.grp,
-                        string_agg(occ.w, ' ' ORDER BY occ.p) AS phrase,
-                        MAX(occ.len) AS n_words,
-                        SUM(ws.nanos) AS nanos
-                 FROM occ JOIN ws ON occ.w = ws.w
-                 GROUP BY 1, 2)
-        SELECT phrase, CAST(MAX(n_words) AS BIGINT) AS n_words,
-               COUNT(*) AS n_occ,
-               ROUND(MAX(nanos) / 1000000000.0, 6) AS score
-        FROM inst GROUP BY 1
-        ORDER BY score DESC, phrase LIMIT {_RAKE_TOPK}
-    """
-
-
-# ---------------------------------------------------------------------------
-# split-conformal prediction intervals (session 11)
-# ---------------------------------------------------------------------------
-
-_CONF_ALPHAS = (50, 80, 90, 95)  # coverage targets, percent
-
-
-def q_conformal_intervals(spark, sf_dir):
-    """Split-conformal prediction intervals around the per-cell mean-value
-    predictor — the distribution-free uncertainty wrapper every field
-    estimator (kriging/IDW layers) should ship with. Deterministic md5
-    split (60/20/20 train/calibration/test); predictor = per-res-3-cell
-    train mean with global-mean fallback; conformal radius at coverage α =
-    the ⌈α(n+1)⌉-th smallest calibration |residual| (exact order
-    statistic); reported with the EMPIRICAL test coverage it achieves.
-    Floats are exact by construction: values become integer cents, means
-    are single exact-integer divisions, residual ranks are integers. Scale
-    shape: two hash aggs (cell means), one window rank on the calibration
-    slice, broadcast α ladder — one scan of events."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("conf|"), F.col("event_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(4294967296.0)
-    )
-    base = ev.select(
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("vi"),
-        cell_encode_col(lat, lng, 3).alias("cell"),
-        u.alias("u"),
-    )
-    train = base.filter(F.col("u") < 0.6)
-    calib = base.filter((F.col("u") >= 0.6) & (F.col("u") < 0.8))
-    test = base.filter(F.col("u") >= 0.8)
-    cmean = train.groupBy("cell").agg(
-        (F.sum("vi") / F.count(F.lit(1))).alias("cpred")
-    )
-    gmean = train.agg((F.sum("vi") / F.count(F.lit(1))).alias("gpred"))
-
-    def _resid(df):
-        return (
-            df.join(F.broadcast(cmean), "cell", "left")
-            .crossJoin(F.broadcast(gmean))
-            .select(
-                "event_id",
-                F.abs(
-                    F.col("vi") - F.coalesce(F.col("cpred"), F.col("gpred"))
-                ).alias("resid"),
-            )
-        )
-
-    from pyspark.sql import Window
-
-    rc = _resid(calib).withColumn(
-        "rn", F.row_number().over(Window.orderBy("resid", "event_id"))
-    )
-    nc = rc.agg(F.count(F.lit(1)).alias("n_calib"))
-    alphas = spark.createDataFrame(
-        [(a,) for a in _CONF_ALPHAS], "alpha_pct int"
-    )
-    ks = (
-        alphas.crossJoin(F.broadcast(nc))
-        .select(
-            "alpha_pct",
-            "n_calib",
-            F.least(
-                F.ceil(
-                    F.col("alpha_pct") * (F.col("n_calib") + 1) / F.lit(100.0)
-                ),
-                F.col("n_calib"),
-            ).alias("k"),
-        )
-    )
-    qs = ks.join(F.broadcast(rc), F.col("k") == F.col("rn")).select(
-        "alpha_pct", "n_calib", F.col("resid").alias("q")
-    )
-    rt = _resid(test)
-    return (
-        rt.crossJoin(F.broadcast(qs))
-        .groupBy("alpha_pct", "n_calib", "q")
-        .agg(
-            F.count(F.lit(1)).alias("n_test"),
-            F.sum((F.col("resid") <= F.col("q")).cast("long")).alias("n_cov"),
-        )
-        .select(
-            "alpha_pct",
-            "n_calib",
-            "n_test",
-            F.round(F.col("q") / F.lit(100.0), 6).alias("q_resid"),
-            F.round(F.col("n_cov") / F.col("n_test").cast("double"), 6).alias(
-                "coverage"
-            ),
-        )
-        .orderBy("alpha_pct")
-    )
-
-
-def _conformal_intervals_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    alphas = ", ".join(f"({a})" for a in _CONF_ALPHAS)
-    return f"""
-        WITH base AS (
-            SELECT event_id,
-                   CAST(ROUND(value * 100) AS BIGINT) AS vi,
-                   {cell} AS cell,
-                   ('0x' || substr(md5('conf|' || CAST(event_id AS VARCHAR)),
-                                   1, 8))::BIGINT / 4294967296.0 AS u
-            FROM events),
-        train AS (SELECT * FROM base WHERE u < 0.6),
-        calib AS (SELECT * FROM base WHERE u >= 0.6 AND u < 0.8),
-        test AS (SELECT * FROM base WHERE u >= 0.8),
-        cmean AS (SELECT cell, SUM(vi) / COUNT(*) AS cpred
-                  FROM train GROUP BY 1),
-        gmean AS (SELECT SUM(vi) / COUNT(*) AS gpred FROM train),
-        rc AS (SELECT c.event_id,
-                      ABS(c.vi - COALESCE(m.cpred, g.gpred)) AS resid
-               FROM calib c LEFT JOIN cmean m ON c.cell = m.cell
-               CROSS JOIN gmean g),
-        rr AS (SELECT resid,
-                      ROW_NUMBER() OVER (ORDER BY resid, event_id) AS rn
-               FROM rc),
-        nc AS (SELECT COUNT(*) AS n_calib FROM rc),
-        ks AS (SELECT a.alpha_pct, nc.n_calib,
-                      LEAST(CAST(CEIL(a.alpha_pct * (nc.n_calib + 1)
-                                      / 100.0) AS BIGINT),
-                            nc.n_calib) AS k
-               FROM (SELECT alpha_pct FROM (VALUES {alphas}) t(alpha_pct)) a
-               CROSS JOIN nc),
-        qs AS (SELECT ks.alpha_pct, ks.n_calib, rr.resid AS q
-               FROM ks JOIN rr ON ks.k = rr.rn),
-        rt AS (SELECT ABS(t.vi - COALESCE(m.cpred, g.gpred)) AS resid
-               FROM test t LEFT JOIN cmean m ON t.cell = m.cell
-               CROSS JOIN gmean g)
-        SELECT qs.alpha_pct, qs.n_calib, COUNT(*) AS n_test,
-               ROUND(qs.q / 100.0, 6) AS q_resid,
-               ROUND(SUM(CAST(rt.resid <= qs.q AS INT))
-                     / CAST(COUNT(*) AS DOUBLE), 6) AS coverage
-        FROM rt CROSS JOIN qs
-        GROUP BY qs.alpha_pct, qs.n_calib, qs.q
-        ORDER BY alpha_pct
-    """
-
-
-# ---------------------------------------------------------------------------
-# isotonic regression via the minimax formula (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_isotonic_hourly(spark, sf_dir):
-    """Isotonic (monotone nondecreasing) regression of hourly event volume
-    against hour-of-day — the shape-constrained calibration fit (the same
-    PAVA solution score-calibration pipelines use). For the bounded series
-    the pool-adjacent-violators solution has the closed minimax form
-    fit_i = max_{s≤i} min_{t≥i} mean(y[s..t]), which is PURE relational
-    algebra: prefix sums → all O(n²) window means → two grouped extrema.
-    Every mean is one exact-integer division, so cross-engine floats are
-    identical with no rounding protocol. n=24 rows after the first agg —
-    everything past the scan is driver-trivial but stays declarative."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.hour(F.col("ts").cast("timestamp")).cast("long").alias("h")
-    )
-    hours = ev.groupBy("h").agg(F.count(F.lit(1)).alias("y"))
-    a = hours.select(F.col("h").alias("s"), F.col("y").alias("ys"))
-    b = hours.select(F.col("h").alias("t"), F.col("y").alias("yt"))
-    spans = a.join(b, F.col("s") <= F.col("t"))
-    mids = hours.select(F.col("h").alias("m"), F.col("y").alias("ym"))
-    win = (
-        spans.join(
-            mids, (F.col("m") >= F.col("s")) & (F.col("m") <= F.col("t"))
-        )
-        .groupBy("s", "t")
-        .agg(
-            (F.sum("ym") / F.count(F.lit(1))).alias("mean")
-        )
-    )
-    inner = (
-        hours.select(F.col("h").alias("i"), "y")
-        .join(win, (F.col("s") <= F.col("i")) & (F.col("t") >= F.col("i")))
-        .groupBy("i", "y", "s")
-        .agg(F.min("mean").alias("mn"))
-    )
-    return (
-        inner.groupBy("i", "y")
-        .agg(F.round(F.max("mn"), 6).alias("fit"))
-        .select(F.col("i").alias("hour"), F.col("y").alias("n_events"), "fit")
-        .orderBy("hour")
-    )
-
-
-def _isotonic_hourly_sql() -> str:
-    return """
-        WITH hours AS (SELECT EXTRACT(hour FROM ts) AS h, COUNT(*) AS y
-                       FROM events GROUP BY 1),
-        win AS (SELECT a.h AS s, b.h AS t,
-                       SUM(m.y) / COUNT(*) AS mean
-                FROM hours a JOIN hours b ON a.h <= b.h
-                JOIN hours m ON m.h >= a.h AND m.h <= b.h
-                GROUP BY 1, 2),
-        inner_ AS (SELECT i.h AS i, i.y, w.s, MIN(w.mean) AS mn
-                   FROM hours i JOIN win w ON w.s <= i.h AND w.t >= i.h
-                   GROUP BY 1, 2, 3)
-        SELECT i AS hour, y AS n_events, ROUND(MAX(mn), 6) AS fit
-        FROM inner_ GROUP BY 1, 2
-        ORDER BY hour
-    """
-
-
-# ---------------------------------------------------------------------------
-# media dHash near-dup (session 11)
+# media dHash near-dup
 # ---------------------------------------------------------------------------
 
 
@@ -20633,7049 +3979,7 @@ def _media_dhash_pairs_sql(n_docs: int = 40, seed: int = 67) -> str:
 
 
 # ---------------------------------------------------------------------------
-# TextTiling topic-boundary detection (session 11)
-# ---------------------------------------------------------------------------
-
-_TT_W = 5  # pseudo-sentence block size (tokens)
-
-
-def q_texttiling_boundaries(spark, sf_dir):
-    """TextTiling topic segmentation (Hearst 1997): token stream → fixed
-    pseudo-sentence blocks of {W} tokens → cosine similarity between each
-    adjacent block pair (exact integer dot/norms; one sqrt) → a gap is a
-    topic BOUNDARY when its similarity drops below the doc's mean − σ/2
-    (Hearst's threshold). The chunker upgrade over `split_text_recursive`:
-    semantic boundaries instead of fixed sizes. One explode + two hash
-    aggs + one self-join on (doc, block+1) + a per-doc window — never
-    doc × doc. Sims pre-rounded 9 dp; threshold comparison at 6 dp."""
-    from pyspark.sql import Window
-
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = d.select(
-        "doc_id",
-        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("p", "w"),
-    ).filter(F.col("w") != "")
-    tf = (
-        toks.withColumn("blk", F.floor(F.col("p") / _TT_W))
-        .groupBy("doc_id", "blk", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    sq = tf.groupBy("doc_id", "blk").agg(F.sum(F.col("c") * F.col("c")).alias("sq"))
-    l, r = tf.alias("l"), tf.alias("r")
-    dots = (
-        l.join(
-            r,
-            (F.col("l.doc_id") == F.col("r.doc_id"))
-            & (F.col("l.blk") + 1 == F.col("r.blk"))
-            & (F.col("l.w") == F.col("r.w")),
-        )
-        .groupBy(F.col("l.doc_id").alias("doc_id"), F.col("l.blk").alias("gap"))
-        .agg(F.sum(F.col("l.c") * F.col("r.c")).alias("dot"))
-    )
-    sims = (
-        dots.join(
-            sq.select(
-                F.col("doc_id"), F.col("blk").alias("gap"), F.col("sq").alias("sql_")
-            ),
-            ["doc_id", "gap"],
-        )
-        .join(
-            sq.select(
-                F.col("doc_id"),
-                (F.col("blk") - 1).alias("gap"),
-                F.col("sq").alias("sqr_"),
-            ),
-            ["doc_id", "gap"],
-        )
-        .select(
-            "doc_id",
-            "gap",
-            F.round(
-                F.col("dot") / F.sqrt((F.col("sql_") * F.col("sqr_")).cast("double")),
-                9,
-            ).alias("sim"),
-        )
-    )
-    wd = Window.partitionBy("doc_id")
-    stats = sims.withColumns(
-        {
-            "mu": F.sum("sim").over(wd) / F.count(F.lit(1)).over(wd),
-            "m2": F.sum(F.col("sim") * F.col("sim")).over(wd)
-            / F.count(F.lit(1)).over(wd),
-        }
-    ).withColumn(
-        "thresh",
-        F.col("mu")
-        - F.sqrt(F.greatest(F.col("m2") - F.col("mu") * F.col("mu"), F.lit(0.0)))
-        / F.lit(2.0),
-    )
-    return (
-        stats.select(
-            "doc_id",
-            "gap",
-            F.round("sim", 6).alias("sim"),
-            F.round("thresh", 6).alias("thresh"),
-            (F.round("sim", 6) < F.round("thresh", 6)).alias("is_boundary"),
-        )
-        .filter(F.col("doc_id") < 200)
-        .orderBy("doc_id", "gap")
-    )
-
-
-def _texttiling_boundaries_sql() -> str:
-    return f"""
-        WITH t AS (SELECT doc_id,
-                          regexp_split_to_array(trim(text), '\\s+') AS arr
-                   FROM documents),
-        toks AS (SELECT doc_id, u.p, u.w
-                 FROM (SELECT doc_id,
-                              UNNEST(list_transform(range(1, len(arr) + 1),
-                                  i -> struct_pack(p := i - 1, w := arr[i])))
-                                  AS u
-                       FROM t)
-                 WHERE u.w != ''),
-        tf AS (SELECT doc_id, p // {_TT_W} AS blk, w, COUNT(*) AS c
-               FROM toks GROUP BY 1, 2, 3),
-        sq AS (SELECT doc_id, blk, SUM(c * c) AS sq
-               FROM tf GROUP BY 1, 2),
-        dots AS (SELECT l.doc_id, l.blk AS gap, SUM(l.c * r.c) AS dot
-                 FROM tf l JOIN tf r
-                   ON l.doc_id = r.doc_id AND l.blk + 1 = r.blk AND l.w = r.w
-                 GROUP BY 1, 2),
-        sims AS (SELECT d.doc_id, d.gap,
-                        ROUND(d.dot / SQRT(CAST(a.sq * b.sq AS DOUBLE)), 9)
-                            AS sim
-                 FROM dots d
-                 JOIN sq a ON a.doc_id = d.doc_id AND a.blk = d.gap
-                 JOIN sq b ON b.doc_id = d.doc_id AND b.blk = d.gap + 1),
-        stats AS (SELECT doc_id, gap, sim,
-                         SUM(sim) OVER (PARTITION BY doc_id)
-                             / COUNT(*) OVER (PARTITION BY doc_id) AS mu,
-                         SUM(sim * sim) OVER (PARTITION BY doc_id)
-                             / COUNT(*) OVER (PARTITION BY doc_id) AS m2
-                  FROM sims),
-        th AS (SELECT doc_id, gap, sim,
-                      mu - SQRT(GREATEST(m2 - mu * mu, 0.0)) / 2.0 AS thresh
-               FROM stats)
-        SELECT doc_id, gap, ROUND(sim, 6) AS sim, ROUND(thresh, 6) AS thresh,
-               ROUND(sim, 6) < ROUND(thresh, 6) AS is_boundary
-        FROM th WHERE doc_id < 200
-        ORDER BY doc_id, gap
-    """
-
-
-# ---------------------------------------------------------------------------
-# trajectory sinuosity (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_traj_sinuosity(spark, sf_dir):
-    """Per-user trajectory sinuosity: total haversine path length over the
-    great-circle displacement between first and last fix — the
-    route-efficiency index (1 = straight commute, ≫1 = wandering). One
-    window shuffle (lag legs + endpoint first/last in the same window
-    pass) + one agg; the same scale shape as `user_travel`, which this
-    extends with the displacement denominator."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.distance import haversine_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng).filter(
-        F.col("user_id") < 50
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wall = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    leg = haversine_col(
-        F.lag("lat").over(w), F.lag("lng").over(w), F.col("lat"), F.col("lng")
-    )
-    net = haversine_col(
-        F.first("lat").over(wall),
-        F.first("lng").over(wall),
-        F.last("lat").over(wall),
-        F.last("lng").over(wall),
-    )
-    agg = (
-        pts.withColumn("leg_km", leg)
-        .withColumn("net_km", net)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("leg_km").alias("path"),
-            F.max("net_km").alias("net"),
-        )
-    )
-    return agg.select(
-        "user_id",
-        "n_events",
-        F.round("path", 6).alias("path_km"),
-        F.round("net", 6).alias("net_km"),
-        F.when(
-            F.col("net") > 0, F.round(F.col("path") / F.col("net"), 6)
-        ).alias("sinuosity"),
-    ).orderBy("user_id")
-
-
-def _traj_sinuosity_sql() -> str:
-    from raptor_service_spark.geo.distance import haversine_sql
-
-    lat, lng = _latlng_sql("event_id")
-    leg = haversine_sql("plat", "plng", "lat", "lng")
-    net = haversine_sql("flat", "flng", "llat", "llng")
-    return f"""
-        WITH p AS (SELECT user_id, ts, event_id,
-                          {lat} AS lat, {lng} AS lng
-                   FROM events WHERE user_id < 50),
-        w AS (SELECT user_id, lat, lng,
-                     LAG(lat) OVER win AS plat,
-                     LAG(lng) OVER win AS plng,
-                     FIRST_VALUE(lat) OVER win AS flat,
-                     FIRST_VALUE(lng) OVER win AS flng,
-                     LAST_VALUE(lat) OVER
-                         (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND UNBOUNDED FOLLOWING) AS llat,
-                     LAST_VALUE(lng) OVER
-                         (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND UNBOUNDED FOLLOWING) AS llng
-              FROM p
-              WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        agg AS (SELECT user_id, COUNT(*) AS n_events,
-                       SUM({leg}) AS path,
-                       MAX({net}) AS net
-                FROM w GROUP BY 1)
-        SELECT user_id, n_events,
-               ROUND(path, 6) AS path_km,
-               ROUND(net, 6) AS net_km,
-               CASE WHEN net > 0 THEN ROUND(path / net, 6) END AS sinuosity
-        FROM agg ORDER BY user_id
-    """
-
-
-# ---------------------------------------------------------------------------
-# Lee's L bivariate spatial association (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_lee_l(spark, sf_dir):
-    """Lee's L (Lee 2001) between the document and event density surfaces
-    at res 5 — the smoothing-aware complement to `bivariate_moran`:
-    L = n·Σᵢ x̃ᵢ*ỹᵢ* / (√Σx*² · √Σy*²) where x̃ᵢ* is the row-standardized
-    3×3-neighborhood (incl. self) mean of the deviations. Captures
-    point-wise association AND spatial clustering in one statistic (Moran
-    cross-products only see the latter). Float discipline: neighborhood
-    sums stay INTEGER (x̃* = (Σxⱼ − kᵢ·x̄)/kᵢ — one float op on exact
-    ints), per-cell products pre-rounded 9 dp before the global sum.
-    One ring join over occupied cells — the morans_i scale shape."""
-    from raptor_service_spark.operators.cell_graph import _RING
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat_d, lng_d = _latlng_cols(F.col("doc_id"))
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat_e, lng_e = _latlng_cols(F.col("event_id"))
-    dc = d.groupBy(cell_encode_col(lat_d, lng_d, 5).alias("cell")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    ec = ev.groupBy(cell_encode_col(lat_e, lng_e, 5).alias("cell")).agg(
-        F.count(F.lit(1)).alias("y")
-    )
-    c = (
-        dc.join(ec, "cell", "full_outer")
-        .select(
-            "cell",
-            F.coalesce("x", F.lit(0)).cast("long").alias("x"),
-            F.coalesce("y", F.lit(0)).cast("long").alias("y"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    stats = c.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    nbrs = F.array(
-        kring_neighbor_col("cell", 5, 0, 0),
-        *[kring_neighbor_col("cell", 5, dx, dy) for dx, dy in _RING],
-    )
-    p = c.select(
-        "cell", F.explode(F.filter(nbrs, lambda v: v.isNotNull())).alias("nbr")
-    )
-    sm = (
-        p.join(
-            c.select(
-                F.col("cell").alias("nbr"),
-                F.col("x").alias("nx"),
-                F.col("y").alias("ny"),
-            ),
-            "nbr",
-        )
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum("nx").alias("sxi"),
-            F.sum("ny").alias("syi"),
-        )
-    )
-    j = sm.crossJoin(F.broadcast(stats))
-    mx = F.col("sx") / F.col("n")
-    my = F.col("sy") / F.col("n")
-    xs = (F.col("sxi") - F.col("k") * mx) / F.col("k")
-    ys = (F.col("syi") - F.col("k") * my) / F.col("k")
-    term = F.round(xs * ys, 9)
-    vx = F.max(F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n"))
-    vy = F.max(F.col("syy") - F.col("sy") * F.col("sy") / F.col("n"))
-    return j.agg(
-        F.max("n").alias("n_cells"),
-        F.round(
-            F.max("n") * F.sum(term) / F.sqrt(vx * vy),
-            6,
-        ).alias("lee_l"),
-    )
-
-
-def _lee_l_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import _RING
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat_d, lng_d = _latlng_sql("doc_id")
-    lat_e, lng_e = _latlng_sql("event_id")
-    cell_d = cell_encode_sql(lat_d, lng_d, 5)
-    cell_e = cell_encode_sql(lat_e, lng_e, 5)
-    nbr = kring_neighbor_sql("c.cell", 5, "o.dx", "o.dy")
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in [(0, 0), *_RING])
-    return f"""
-        WITH dc AS (SELECT {cell_d} AS cell, COUNT(*) AS x
-                    FROM documents GROUP BY 1),
-        ec AS (SELECT {cell_e} AS cell, COUNT(*) AS y
-               FROM events GROUP BY 1),
-        c AS MATERIALIZED (
-            SELECT COALESCE(dc.cell, ec.cell) AS cell,
-                   CAST(COALESCE(dc.x, 0) AS BIGINT) AS x,
-                   CAST(COALESCE(ec.y, 0) AS BIGINT) AS y
-            FROM dc FULL OUTER JOIN ec ON dc.cell = ec.cell),
-        s AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-                     SUM(x * x) AS sxx, SUM(y * y) AS syy
-              FROM c),
-        p AS (SELECT c.cell, {nbr} AS nbr
-              FROM c CROSS JOIN (VALUES {offs}) o(dx, dy)
-              WHERE {nbr} IS NOT NULL),
-        sm AS (SELECT p.cell, COUNT(*) AS k,
-                      SUM(c2.x) AS sxi, SUM(c2.y) AS syi
-               FROM p JOIN c c2 ON p.nbr = c2.cell
-               GROUP BY 1),
-        terms AS (SELECT
-                      ROUND(((sm.sxi - sm.k * (s.sx / CAST(s.n AS DOUBLE)))
-                             / sm.k)
-                          * ((sm.syi - sm.k * (s.sy / CAST(s.n AS DOUBLE)))
-                             / sm.k), 9) AS t,
-                      s.n, s.sx, s.sy, s.sxx, s.syy
-                  FROM sm CROSS JOIN s)
-        SELECT MAX(n) AS n_cells,
-               ROUND(MAX(n) * SUM(t)
-                     / SQRT((MAX(sxx) - MAX(sx) * MAX(sx)
-                             / CAST(MAX(n) AS DOUBLE))
-                          * (MAX(syy) - MAX(sy) * MAX(sy)
-                             / CAST(MAX(n) AS DOUBLE))), 6) AS lee_l
-        FROM terms
-    """
-
-
-# ---------------------------------------------------------------------------
-# reliability diagram + expected calibration error (session 11)
-# ---------------------------------------------------------------------------
-
-_CAL_STOP = ("the", "a", "an", "of", "to", "in", "and", "is", "it", "that")
-
-
-def q_calibration_bins(spark, sf_dir):
-    """Reliability diagram + ECE for a fixed linguistic English-ness
-    scorer: p̂ = min(stopword token hits, 8)/8 (a DYADIC rational — every
-    p̂, every per-bin sum of p̂, is exactly representable, so confidence
-    means are order-independent with NO float protocol), ground truth =
-    (lang = 'en'). 10 equal-width bins: per-bin count, mean confidence,
-    empirical accuracy, |gap|, and the corpus ECE Σ (n_b/n)·gap — the
-    audit every learned quality/langid filter in the curation pipeline
-    should publish before its threshold is trusted. One scan, two aggs."""
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    toks = d.select(
-        "doc_id",
-        "lang",
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w"),
-    )
-    hits = toks.groupBy("doc_id", "lang").agg(
-        F.sum(F.col("w").isin(*_CAL_STOP).cast("long")).alias("sh")
-    )
-    scored = hits.select(
-        (F.least(F.col("sh"), F.lit(8)) / F.lit(8.0)).alias("p"),
-        (F.col("lang") == "en").cast("long").alias("pos"),
-    )
-    binned = scored.select(
-        F.least(F.floor(F.col("p") * 10), F.lit(9)).cast("int").alias("bin"),
-        "p",
-        "pos",
-    )
-    bins = binned.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        (F.sum("p") / F.count(F.lit(1))).alias("conf"),
-        (F.sum("pos") / F.count(F.lit(1))).alias("acc"),
-    )
-    tot = binned.agg(F.count(F.lit(1)).alias("n"))
-    ece = (
-        bins.crossJoin(F.broadcast(tot))
-        .select(
-            F.round(
-                (F.col("n_docs") / F.col("n")) * F.abs(F.col("acc") - F.col("conf")),
-                9,
-            ).alias("t")
-        )
-        .agg(F.round(F.sum("t"), 6).alias("ece"))
-    )
-    return (
-        bins.crossJoin(F.broadcast(ece))
-        .select(
-            "bin",
-            "n_docs",
-            F.round("conf", 6).alias("conf"),
-            F.round("acc", 6).alias("acc"),
-            F.round(F.abs(F.col("acc") - F.col("conf")), 6).alias("gap"),
-            "ece",
-        )
-        .orderBy("bin")
-    )
-
-
-def _calibration_bins_sql() -> str:
-    stop = ", ".join(f"'{w}'" for w in _CAL_STOP)
-    return f"""
-        WITH toks AS (
-            SELECT doc_id, lang, UNNEST(
-                regexp_split_to_array(trim(text), '\\s+')) AS w
-            FROM documents),
-        hits AS (
-            SELECT doc_id, lang,
-                   SUM(CAST(w IN ({stop}) AS BIGINT)) AS sh
-            FROM toks GROUP BY 1, 2),
-        scored AS (
-            SELECT LEAST(sh, 8) / 8.0 AS p,
-                   CAST(lang = 'en' AS BIGINT) AS pos
-            FROM hits),
-        binned AS (
-            SELECT CAST(LEAST(CAST(FLOOR(p * 10) AS BIGINT), 9) AS INT)
-                       AS bin, p, pos
-            FROM scored),
-        bins AS (
-            SELECT bin, COUNT(*) AS n_docs,
-                   SUM(p) / COUNT(*) AS conf,
-                   SUM(pos) / CAST(COUNT(*) AS DOUBLE) AS acc
-            FROM binned GROUP BY 1),
-        tot AS (SELECT COUNT(*) AS n FROM binned),
-        ece AS (
-            SELECT ROUND(SUM(ROUND((n_docs / CAST(n AS DOUBLE))
-                                   * ABS(acc - conf), 9)), 6) AS ece
-            FROM bins CROSS JOIN tot)
-        SELECT bin, n_docs, ROUND(conf, 6) AS conf, ROUND(acc, 6) AS acc,
-               ROUND(ABS(acc - conf), 6) AS gap, ece.ece AS ece
-        FROM bins CROSS JOIN ece
-        ORDER BY bin
-    """
-
-
-# ---------------------------------------------------------------------------
-# Borůvka MST over the occupied-cell graph (session 11)
-# ---------------------------------------------------------------------------
-
-_MST_RES, _MST_ROUNDS, _MST_JUMPS = 4, 10, 10
-
-
-def q_mst_cells(spark, sf_dir):
-    """Minimum spanning tree of the occupied res-4 document-cell adjacency
-    graph (8-adjacency, integer |density difference| weights, (w, a, b)
-    total order ⇒ unique MST) by fixed-schedule distributed Borůvka:
-    per round one grouped-min over the edge table picks each component's
-    cheapest outgoing edge, then hook + 10 pointer-jumping shortcuts merge
-    labels EXACTLY (2^10 ≥ node bound 512 — no convergence loop to
-    truncate). The single-linkage/HDBSCAN backbone over tiles; Θ(log n)
-    rounds of pure joins/aggs, zero floats. See `operators/mst.py`."""
-    from raptor_service_spark.operators.mst import boruvka_mst, cell_edges
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(lat.alias("lat"), lng.alias("lng"))
-    return boruvka_mst(
-        cell_edges(pts, _MST_RES), rounds=_MST_ROUNDS, jumps=_MST_JUMPS
-    )
-
-
-def _mst_cells_sql() -> str:
-    from raptor_service_spark.operators.mst import boruvka_mst_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    return boruvka_mst_sql(
-        f"SELECT {lat} AS lat, {lng} AS lng FROM documents",
-        _MST_RES,
-        rounds=_MST_ROUNDS,
-        jumps=_MST_JUMPS,
-    )
-
-
-# ---------------------------------------------------------------------------
-# MAD robust outliers per cell (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_mad_outliers(spark, sf_dir):
-    """Robust per-cell outlier screen: median and MAD (median absolute
-    deviation) of event values per res-3 cell — both EXACT order
-    statistics on integer cents (lower-median convention: the
-    ⌈n/2⌉-th smallest, so no averaging float) — then flag events with
-    |v − med| > 3·MAD. The robust QC filter that survives the heavy
-    tails that wreck mean/σ rules (`speed_anomalies`' z-scores). Scale
-    shape: two windowed ranks partitioned BY CELL (parallel, no global
-    sort) + one broadcast join back; top-20 most extreme flagged events."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    base = ev.select(
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("vi"),
-        cell_encode_col(lat, lng, 3).alias("cell"),
-    )
-    wc = Window.partitionBy("cell")
-    med = (
-        base.withColumn(
-            "rn", F.row_number().over(wc.orderBy("vi", "event_id"))
-        )
-        .withColumn("n", F.count(F.lit(1)).over(wc))
-        .filter(F.col("rn") == F.ceil(F.col("n") / 2))
-        .select("cell", F.col("vi").alias("med"), F.col("n").alias("n_cell"))
-    )
-    dev = base.join(F.broadcast(med), "cell").withColumn(
-        "ad", F.abs(F.col("vi") - F.col("med"))
-    )
-    mad = (
-        dev.withColumn("rn", F.row_number().over(wc.orderBy("ad", "event_id")))
-        .filter(F.col("rn") == F.ceil(F.col("n_cell") / 2))
-        .select("cell", F.col("ad").alias("mad"))
-    )
-    return (
-        dev.join(F.broadcast(mad), "cell")
-        .filter(F.col("ad") > 3 * F.col("mad"))
-        .select(
-            "event_id",
-            "cell",
-            F.round(F.col("vi") / 100.0, 6).alias("value"),
-            F.round(F.col("med") / 100.0, 6).alias("cell_median"),
-            F.round(F.col("mad") / 100.0, 6).alias("cell_mad"),
-            (F.col("ad") - 3 * F.col("mad")).alias("excess_cents"),
-        )
-        .orderBy(F.col("excess_cents").desc(), "event_id")
-        .limit(20)
-    )
-
-
-def _mad_outliers_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH base AS (
-            SELECT event_id, CAST(ROUND(value * 100) AS BIGINT) AS vi,
-                   {cell} AS cell
-            FROM events),
-        rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY cell
-                                            ORDER BY vi, event_id) AS rn,
-                      COUNT(*) OVER (PARTITION BY cell) AS n
-               FROM base),
-        med AS (SELECT cell, vi AS med, n AS n_cell
-                FROM rk WHERE rn = CAST(CEIL(n / 2.0) AS BIGINT)),
-        dev AS (SELECT b.event_id, b.cell, b.vi, m.med, m.n_cell,
-                       ABS(b.vi - m.med) AS ad
-                FROM base b JOIN med m ON b.cell = m.cell),
-        rk2 AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY cell
-                                             ORDER BY ad, event_id) AS rn
-                FROM dev),
-        mad AS (SELECT cell, ad AS mad
-                FROM rk2 WHERE rn = CAST(CEIL(n_cell / 2.0) AS BIGINT))
-        SELECT d.event_id, d.cell,
-               ROUND(d.vi / 100.0, 6) AS value,
-               ROUND(d.med / 100.0, 6) AS cell_median,
-               ROUND(x.mad / 100.0, 6) AS cell_mad,
-               CAST(d.ad - 3 * x.mad AS BIGINT) AS excess_cents
-        FROM dev d JOIN mad x ON d.cell = x.cell
-        WHERE d.ad > 3 * x.mad
-        ORDER BY excess_cents DESC, d.event_id
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# Theil inequality decomposition (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_theil_decomposition(spark, sf_dir):
-    """Theil-T inequality of event activity across res-4 cells, EXACTLY
-    decomposed into between-region and within-region parts over res-2
-    parent regions (T = T_b + Σ s_r T_r) — the additive-decomposability
-    property that makes Theil (not Gini) the inequality index for
-    hierarchical tile rollups. All shares are exact integer ratios; ln
-    appears only on those exact ratios (the `doc_perplexity` discipline);
-    terms pre-rounded 9 dp. One count agg + two grouped sums."""
-    from raptor_service_spark.geo.grid import cell_parent_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cells = (
-        ev.select(cell_encode_col(lat, lng, 4).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .withColumn("region", cell_parent_col(F.col("cell"), 4, 2))
-    )
-    # NOTE: Spark resolves case-insensitively — the total must NOT be
-    # named "X" or it collides with the per-cell "x".
-    tot = cells.agg(
-        F.sum("x").alias("xt"), F.count(F.lit(1)).alias("n")
-    )
-    reg = cells.groupBy("region").agg(
-        F.sum("x").alias("xr"), F.count(F.lit(1)).alias("nr")
-    )
-    # within: per cell, term = (x/X)·ln( (x/X) / (xr·? ...) ) using the
-    # per-region Theil: T_r = Σ_{i∈r} (x_i/X_r)·ln( n_r·x_i / X_r )
-    j = cells.join(F.broadcast(reg), "region").crossJoin(F.broadcast(tot))
-    tw_term = F.round(
-        (F.col("x") / F.col("xr"))
-        * F.log(F.col("nr") * F.col("x") / F.col("xr")),
-        9,
-    )
-    within = (
-        j.groupBy("region", "xr", "nr")
-        .agg(F.sum(tw_term).alias("t_r"))
-        .crossJoin(F.broadcast(tot))
-    )
-    tb_term = F.round(
-        (F.col("xr") / F.col("xt"))
-        * F.log(
-            (F.col("xr") / F.col("xt")) / (F.col("nr") / F.col("n"))
-        ),
-        9,
-    )
-    tw_scaled = F.round((F.col("xr") / F.col("xt")) * F.col("t_r"), 9)
-    out = within.agg(
-        F.max("n").alias("n_cells"),
-        F.count(F.lit(1)).alias("n_regions"),
-        F.round(F.sum(tb_term), 6).alias("t_between"),
-        F.round(F.sum(tw_scaled), 6).alias("t_within"),
-        F.round(F.sum(tb_term) + F.sum(tw_scaled), 6).alias("t_total"),
-    )
-    return out
-
-
-def _theil_decomposition_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_parent_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    region = cell_parent_sql("cell", 4, 2)
-    return f"""
-        WITH cells AS (
-            SELECT cell, COUNT(*) AS x, {region} AS region
-            FROM (SELECT {cell} AS cell FROM events) GROUP BY 1),
-        tot AS (SELECT SUM(x) AS X, COUNT(*) AS n FROM cells),
-        reg AS (SELECT region, SUM(x) AS xr, COUNT(*) AS nr
-                FROM cells GROUP BY 1),
-        within AS (
-            SELECT c.region, r.xr, r.nr,
-                   SUM(ROUND((c.x / CAST(r.xr AS DOUBLE))
-                             * LN(r.nr * c.x / CAST(r.xr AS DOUBLE)), 9))
-                       AS t_r
-            FROM cells c JOIN reg r ON c.region = r.region
-            GROUP BY 1, 2, 3)
-        SELECT MAX(t.n) AS n_cells, COUNT(*) AS n_regions,
-               ROUND(SUM(ROUND((w.xr / CAST(t.X AS DOUBLE))
-                               * LN((w.xr / CAST(t.X AS DOUBLE))
-                                    / (w.nr / CAST(t.n AS DOUBLE))), 9)), 6)
-                   AS t_between,
-               ROUND(SUM(ROUND((w.xr / CAST(t.X AS DOUBLE)) * w.t_r, 9)), 6)
-                   AS t_within,
-               ROUND(SUM(ROUND((w.xr / CAST(t.X AS DOUBLE))
-                               * LN((w.xr / CAST(t.X AS DOUBLE))
-                                    / (w.nr / CAST(t.n AS DOUBLE))), 9))
-                     + SUM(ROUND((w.xr / CAST(t.X AS DOUBLE)) * w.t_r, 9)), 6)
-                   AS t_total
-        FROM within w CROSS JOIN tot t
-    """
-
-
-# ---------------------------------------------------------------------------
-# jump-length distribution fit (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_jump_length_fit(spark, sf_dir):
-    """Jump-length (displacement) distribution of consecutive user fixes
-    with a log-log power-law slope — the mobility-science scaling law
-    (González et al. 2008: P(Δr) ~ Δr^−β). Legs from the one-window lag
-    chain, log₂-binned (exact: FLOOR(LOG2) on integer meters), per-bin
-    counts, then the OLS slope of ln(count) on ln(2)·bin over non-empty
-    bins — every float computed from aggregated exact integers. One
-    window + two tiny aggs; the per-bin histogram is the reusable part."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.distance import haversine_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # each user's FIRST fix has no jump: filter the null lag explicitly —
-    # haversine_col's LEAST(1.0, NULL) would otherwise turn it into the
-    # antipodal max (both engines' LEAST skip NULLs).
-    lagged = (
-        pts.withColumn("plat", F.lag("lat").over(w))
-        .withColumn("plng", F.lag("lng").over(w))
-        .filter(F.col("plat").isNotNull())
-    )
-    leg_m = (
-        haversine_col(F.col("plat"), F.col("plng"), F.col("lat"), F.col("lng"))
-        * 1000.0
-    )
-    # bin = floor(log2(round(leg_m))) computed EXACTLY as the bit length
-    # of the integer meters (length(bin(m)) - 1) — libm log2 could round
-    # differently across engines at exact powers of two.
-    bins = (
-        lagged.withColumn("leg_m", leg_m)
-        .filter(F.col("leg_m") >= 1.0)
-        .select(
-            (
-                F.length(F.bin(F.round("leg_m").cast("long"))) - 1
-            )
-            .cast("long")
-            .alias("bin")
-        )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    fit = bins.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum(F.col("bin")).alias("sx"),
-        F.sum(F.col("bin") * F.col("bin")).alias("sxx"),
-        F.sum(F.round(F.log("cnt"), 9)).alias("sy"),
-        F.sum(F.col("bin") * F.round(F.log("cnt"), 9)).alias("sxy"),
-    ).select(
-        F.round(
-            (F.col("k") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / (F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx"))
-            / F.log(F.lit(2.0)),
-            6,
-        ).alias("slope_per_doubling")
-    )
-    return (
-        bins.crossJoin(F.broadcast(fit))
-        .select("bin", "cnt", "slope_per_doubling")
-        .orderBy("bin")
-    )
-
-
-def _jump_length_fit_sql() -> str:
-    from raptor_service_spark.geo.distance import haversine_sql
-
-    lat, lng = _latlng_sql("event_id")
-    leg = haversine_sql("plat", "plng", "lat", "lng")
-    return f"""
-        WITH p AS (SELECT user_id, ts, event_id,
-                          {lat} AS lat, {lng} AS lng
-                   FROM events),
-        legs AS (SELECT ({leg}) * 1000.0 AS leg_m
-                 FROM (SELECT user_id, lat, lng,
-                              LAG(lat) OVER (PARTITION BY user_id
-                                             ORDER BY ts, event_id) AS plat,
-                              LAG(lng) OVER (PARTITION BY user_id
-                                             ORDER BY ts, event_id) AS plng
-                       FROM p)
-                 WHERE plat IS NOT NULL),
-        bins AS (SELECT CAST(length(bin(CAST(ROUND(leg_m) AS BIGINT))) - 1
-                             AS BIGINT) AS bin,
-                        COUNT(*) AS cnt
-                 FROM legs WHERE leg_m >= 1.0 GROUP BY 1),
-        fit AS (SELECT ROUND((COUNT(*) * SUM(bin * ROUND(LN(cnt), 9))
-                              - SUM(bin) * SUM(ROUND(LN(cnt), 9)))
-                             / (COUNT(*) * SUM(bin * bin)
-                                - SUM(bin) * SUM(bin))
-                             / LN(2.0), 6) AS slope_per_doubling
-                FROM bins)
-        SELECT bin, cnt, fit.slope_per_doubling
-        FROM bins CROSS JOIN fit
-        ORDER BY bin
-    """
-
-
-# ---------------------------------------------------------------------------
-# density-similarity raster segmentation (session 11)
-# ---------------------------------------------------------------------------
-
-_SEG_RES, _SEG_MAXW = 4, 0  # merge only equal-density neighbors
-
-
-def q_cell_segmentation(spark, sf_dir):
-    """Raster segmentation of the document-density surface: merge
-    8-adjacent res-4 cells whose counts differ by ≤ {maxw} (the classic
-    connected-component labeling / region-growing step of every raster
-    pipeline), components via the SAME fixed-schedule Borůvka merge as
-    `mst_cells` (a graph's MST forest spans exactly its components).
-    Isolated occupied cells stay singleton segments. Top-20 segments by
-    size; all-integer."""
-    from raptor_service_spark.operators.mst import cell_edges, graph_components
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(lat.alias("lat"), lng.alias("lng"))
-    nodes = (
-        pts.select(
-            cell_encode_col(F.col("lat"), F.col("lng"), _SEG_RES).alias("cell")
-        )
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    edges = cell_edges(pts, _SEG_RES).filter(F.col("w") <= _SEG_MAXW)
-    comps = graph_components(edges, rounds=_MST_ROUNDS, nodes=nodes)
-    return (
-        comps.join(nodes, "cell")
-        .groupBy(F.col("comp").alias("segment"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("cnt").alias("n_docs"),
-        )
-        .orderBy(F.col("n_cells").desc(), "segment")
-        .limit(20)
-    )
-
-
-def _cell_segmentation_sql() -> str:
-    from raptor_service_spark.operators.mst import boruvka_mst_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _SEG_RES)
-    comps = boruvka_mst_sql(
-        f"SELECT {lat} AS lat, {lng} AS lng FROM documents",
-        _SEG_RES,
-        rounds=_MST_ROUNDS,
-        jumps=_MST_JUMPS,
-        max_w=_SEG_MAXW,
-        final="components",
-    )
-    return f"""
-        SELECT x.comp AS segment, COUNT(*) AS n_cells,
-               CAST(SUM(y.cnt) AS BIGINT) AS n_docs
-        FROM ({comps}) x
-        JOIN (SELECT {cell} AS cell, COUNT(*) AS cnt
-              FROM documents GROUP BY 1) y ON x.cell = y.cell
-        GROUP BY 1
-        ORDER BY n_cells DESC, segment
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# distribution-based score fusion (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_dbsf_fusion(spark, sf_dir):
-    """Distribution-based score fusion (DBSF): z-normalize each retrieval
-    leg's scores over its own top-50 pool (BM25 keyword leg; cosine
-    vector leg), fused = Σ z with 0 for a missing leg — the calibrated
-    alternative to `hybrid_retrieval`'s rank-only RRF (score shape
-    matters when one leg is confident). z pre-rounded 9 dp, fused 6 dp;
-    the μ/σ come from 20-row aggregates. Same two-leg scan shape as RRF."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import bm25_topk
-
-    kw = bm25_topk(
-        _read(spark, sf_dir, "documents").select("doc_id", "text"),
-        list(_BM25_TERMS),
-        50,
-    ).select("doc_id", F.col("score").alias("s"))
-    kw_st = kw.agg(
-        (F.sum("s") / F.count(F.lit(1))).alias("mu"),
-        (F.sum(F.col("s") * F.col("s")) / F.count(F.lit(1))).alias("m2"),
-    )
-    kwz = kw.crossJoin(F.broadcast(kw_st)).select(
-        "doc_id",
-        F.round(
-            (F.col("s") - F.col("mu"))
-            / F.sqrt(
-                F.greatest(F.col("m2") - F.col("mu") * F.col("mu"), F.lit(1e-12))
-            ),
-            9,
-        ).alias("zk"),
-    )
-    e = _read(spark, sf_dir, "embeddings")
-    vec = (
-        e.withColumn(
-            "sim", F.round(F.lit(1.0) - cosine_dist_col(F.col("embedding"), QVEC), 6)
-        )
-        .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-        .limit(50)
-        .select(F.col("vec_id").alias("doc_id"), "sim")
-    )
-    vec_st = vec.agg(
-        (F.sum("sim") / F.count(F.lit(1))).alias("mu"),
-        (F.sum(F.col("sim") * F.col("sim")) / F.count(F.lit(1))).alias("m2"),
-    )
-    vecz = vec.crossJoin(F.broadcast(vec_st)).select(
-        "doc_id",
-        F.round(
-            (F.col("sim") - F.col("mu"))
-            / F.sqrt(
-                F.greatest(F.col("m2") - F.col("mu") * F.col("mu"), F.lit(1e-12))
-            ),
-            9,
-        ).alias("zv"),
-    )
-    return (
-        kwz.join(vecz, "doc_id", "full_outer")
-        .select(
-            "doc_id",
-            F.round(
-                F.coalesce(F.col("zk"), F.lit(0.0))
-                + F.coalesce(F.col("zv"), F.lit(0.0)),
-                6,
-            ).alias("dbsf"),
-        )
-        .orderBy(F.col("dbsf").desc(), "doc_id")
-        .limit(10)
-    )
-
-
-def _dbsf_fusion_sql() -> str:
-    return f"""
-        WITH kw AS (SELECT doc_id, score AS s FROM ({_bm25_sql_entry(50)})),
-        kst AS (SELECT SUM(s) / COUNT(*) AS mu,
-                       SUM(s * s) / COUNT(*) AS m2 FROM kw),
-        kwz AS (SELECT doc_id,
-                       ROUND((s - mu) / SQRT(GREATEST(m2 - mu * mu, 1e-12)), 9)
-                           AS zk
-                FROM kw CROSS JOIN kst),
-        vec AS (SELECT vec_id AS doc_id, sim
-                FROM (SELECT vec_id,
-                             ROUND(list_cosine_similarity(
-                                 list_transform(embedding,
-                                                x -> CAST(x AS DOUBLE)),
-                                 {QVEC_SQL}), 6) AS sim
-                      FROM embeddings
-                      ORDER BY sim DESC, vec_id ASC LIMIT 50)),
-        vst AS (SELECT SUM(sim) / COUNT(*) AS mu,
-                       SUM(sim * sim) / COUNT(*) AS m2 FROM vec),
-        vecz AS (SELECT doc_id,
-                        ROUND((sim - mu)
-                              / SQRT(GREATEST(m2 - mu * mu, 1e-12)), 9) AS zv
-                 FROM vec CROSS JOIN vst)
-        SELECT COALESCE(kwz.doc_id, vecz.doc_id) AS doc_id,
-               ROUND(COALESCE(zk, 0.0) + COALESCE(zv, 0.0), 6) AS dbsf
-        FROM kwz FULL OUTER JOIN vecz ON kwz.doc_id = vecz.doc_id
-        ORDER BY dbsf DESC, doc_id ASC LIMIT 10
-    """
-
-
-# ---------------------------------------------------------------------------
-# best-passage extraction (session 11)
-# ---------------------------------------------------------------------------
-
-_BP_W = 10  # passage window, tokens
-
-
-def q_best_passage(spark, sf_dir):
-    """Best-passage (snippet) extraction for the BM25 top-5 docs: the
-    10-token window with the most query-term hits, tie-broken to the
-    earliest start (argmax is a struct-max — no second pass). Candidate
-    starts are query-term positions only (the optimal window starts at a
-    hit), so the candidate join is O(hits²) per doc, hits ≤ tokens.
-    Returns the reconstructed passage text — the search-result snippet
-    leg the retrieval stack serves. All-integer + string ops."""
-    from raptor_service_spark.operators.bm25 import bm25_topk
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    top = bm25_topk(docs, list(_BM25_TERMS), 5).select("doc_id")
-    toks = docs.join(F.broadcast(top), "doc_id").select(
-        "doc_id",
-        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("p", "w"),
-    )
-    qt = toks.filter(F.col("w").isin(*_BM25_TERMS))
-    a, b = qt.alias("a"), qt.alias("b")
-    hits = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("b.p") >= F.col("a.p"))
-            & (F.col("b.p") < F.col("a.p") + _BP_W),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_id"), F.col("a.p").alias("start"))
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    best = hits.groupBy("doc_id").agg(
-        F.max(F.struct(F.col("n_hits"), (-F.col("start")).alias("ns"))).alias("b")
-    ).select(
-        "doc_id",
-        F.col("b.n_hits").alias("n_hits"),
-        (-F.col("b.ns")).alias("start"),
-    )
-    passage = (
-        toks.join(F.broadcast(best), "doc_id")
-        .filter(
-            (F.col("p") >= F.col("start")) & (F.col("p") < F.col("start") + _BP_W)
-        )
-        .groupBy("doc_id", "start", "n_hits")
-        .agg(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("p", "w"))),
-                    lambda s: s["w"],
-                ),
-            ).alias("passage")
-        )
-    )
-    return passage.select("doc_id", "start", "n_hits", "passage").orderBy(
-        "doc_id"
-    )
-
-
-def _best_passage_sql() -> str:
-    terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    return f"""
-        WITH top AS (SELECT doc_id FROM ({_bm25_sql_entry(5)})),
-        t AS (SELECT d.doc_id,
-                     regexp_split_to_array(trim(d.text), '\\s+') AS arr
-              FROM documents d JOIN top ON d.doc_id = top.doc_id),
-        toks AS (SELECT doc_id, u.p, u.w
-                 FROM (SELECT doc_id,
-                              UNNEST(list_transform(range(1, len(arr) + 1),
-                                  i -> struct_pack(p := i - 1, w := arr[i])))
-                                  AS u
-                       FROM t)),
-        qt AS (SELECT doc_id, p FROM toks WHERE w IN ({terms})),
-        hits AS (SELECT a.doc_id, a.p AS start, COUNT(*) AS n_hits
-                 FROM qt a JOIN qt b
-                   ON a.doc_id = b.doc_id AND b.p >= a.p
-                      AND b.p < a.p + {_BP_W}
-                 GROUP BY 1, 2),
-        best AS (SELECT doc_id,
-                        MAX(struct_pack(n_hits := n_hits, ns := -start)) AS b
-                 FROM hits GROUP BY 1),
-        sel AS (SELECT doc_id, b.n_hits AS n_hits, -b.ns AS start FROM best)
-        SELECT s.doc_id AS doc_id, CAST(s.start AS BIGINT) AS start,
-               CAST(s.n_hits AS BIGINT) AS n_hits,
-               string_agg(k.w, ' ' ORDER BY k.p) AS passage
-        FROM sel s JOIN toks k
-          ON k.doc_id = s.doc_id AND k.p >= s.start
-             AND k.p < s.start + {_BP_W}
-        GROUP BY 1, 2, 3
-        ORDER BY s.doc_id
-    """
-
-
-# ---------------------------------------------------------------------------
-# IDW leave-one-out cross-validation (session 11)
-# ---------------------------------------------------------------------------
-
-_LOOCV_EPS = 8.0
-
-
-def q_idw_loocv(spark, sf_dir):
-    """Leave-one-out cross-validation of the IDW field estimator: every
-    site (bounded probe set, event_id < 2000) is predicted from its
-    OTHER neighbors within ε via the one-shuffle cell/ring ε-join, and
-    the pooled MAE/RMSE is the honesty metric `idw_interpolation` should
-    publish next to its map (the model-validation leg of the kriging /
-    IDW family). Errors in integer cents where possible; per-site preds
-    6 dp, squared errors 9 dp before the final mean."""
-    from raptor_service_spark.operators.pip_join import within_distance_join
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    probes = pts.filter(F.col("event_id") < 2000)
-    pairs = within_distance_join(probes, pts, eps=_LOOCV_EPS).filter(
-        F.col("l.event_id") != F.col("r.event_id")
-    )
-    wgt = F.lit(1.0) / (F.col("dist") + F.lit(0.001))
-    pred = (
-        pairs.groupBy(
-            F.col("l.event_id").alias("event_id"), F.col("l.value").alias("truth")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_nbrs"),
-            F.round(
-                F.sum(F.col("r.value") * wgt) / F.sum(wgt), 6
-            ).alias("pred"),
-        )
-    )
-    err = F.col("pred") - F.col("truth")
-    return pred.agg(
-        F.count(F.lit(1)).alias("n_sites"),
-        F.round(F.sum(F.round(F.abs(err), 9)) / F.count(F.lit(1)), 6).alias("mae"),
-        F.round(
-            F.sqrt(F.sum(F.round(err * err, 9)) / F.count(F.lit(1))), 6
-        ).alias("rmse"),
-    )
-
-
-def _idw_loocv_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    return f"""
-        WITH p AS (SELECT event_id, value, {lat} AS lat, {lng} AS lng
-                   FROM events),
-        pr AS (SELECT * FROM p WHERE event_id < 2000),
-        pairs AS (
-            SELECT pr.event_id, pr.value AS truth, x.value AS nv,
-                   ROUND(SQRT((pr.lat - x.lat) * (pr.lat - x.lat)
-                            + (pr.lng - x.lng) * (pr.lng - x.lng)), 6) AS dist
-            FROM pr JOIN p x
-              ON pr.event_id != x.event_id
-             AND ROUND(SQRT((pr.lat - x.lat) * (pr.lat - x.lat)
-                          + (pr.lng - x.lng) * (pr.lng - x.lng)), 6)
-                 <= {_LOOCV_EPS!r}),
-        pred AS (SELECT event_id, truth, COUNT(*) AS n_nbrs,
-                        ROUND(SUM(nv * (1.0 / (dist + 0.001)))
-                              / SUM(1.0 / (dist + 0.001)), 6) AS pred
-                 FROM pairs GROUP BY 1, 2)
-        SELECT COUNT(*) AS n_sites,
-               ROUND(SUM(ROUND(ABS(pred - truth), 9)) / COUNT(*), 6) AS mae,
-               ROUND(SQRT(SUM(ROUND((pred - truth) * (pred - truth), 9))
-                          / COUNT(*)), 6) AS rmse
-        FROM pred
-    """
-
-
-# ---------------------------------------------------------------------------
-# marching-squares contour extraction (raster→vector) (session 11)
-# ---------------------------------------------------------------------------
-
-_MS_RES, _MS_TAU = 4, 2
-_MS_CORNERS = [(0, 0, 8), (1, 0, 4), (1, 1, 2), (0, 1, 1)]  # (dx, dy, bit)
-
-
-def q_contour_cases(spark, sf_dir):
-    """Marching squares over the res-4 document-density raster at
-    iso-level τ={tau}: every 2×2 block touching an occupied cell gets its
-    4-bit inside/outside case (off-grid corners = outside), and the
-    boundary blocks (cases 1–14) are the VECTOR contour of the raster —
-    exactly the raster→vector tile-materialization step a tile server
-    runs to draw density outlines. Cases 5/10 are the saddle blocks (2
-    segments each). One count agg + a 4-way broadcast corner join on the
-    O(occupied) anchor set; all-integer."""
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = (
-        d.groupBy(cell_encode_col(lat, lng, _MS_RES).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
-    anchors = (
-        occ.select(
-            F.explode(
-                F.filter(
-                    F.array(
-                        *[
-                            kring_neighbor_col("cell", _MS_RES, -dx, -dy)
-                            for dx, dy, _ in _MS_CORNERS
-                        ]
-                    ),
-                    lambda v: v.isNotNull(),
-                )
-            ).alias("anchor")
-        )
-        .distinct()
-    )
-    blocks = anchors
-    case = F.lit(0)
-    for k, (dx, dy, bit) in enumerate(_MS_CORNERS):
-        corner = occ.select(
-            F.col("cell").alias(f"c{k}"), F.col("cnt").alias(f"n{k}")
-        )
-        blocks = blocks.withColumn(
-            f"c{k}", kring_neighbor_col("anchor", _MS_RES, dx, dy)
-        ).join(F.broadcast(corner), f"c{k}", "left")
-        case = case + F.when(
-            F.coalesce(F.col(f"n{k}"), F.lit(0)) >= _MS_TAU, F.lit(bit)
-        ).otherwise(F.lit(0))
-    cased = blocks.select(case.alias("ms_case")).filter(
-        ~F.col("ms_case").isin(0, 15)
-    )
-    return (
-        cased.groupBy("ms_case")
-        .agg(F.count(F.lit(1)).alias("n_blocks"))
-        .select(
-            "ms_case",
-            "n_blocks",
-            (
-                F.col("n_blocks")
-                * F.when(F.col("ms_case").isin(5, 10), 2).otherwise(1)
-            ).alias("n_segments"),
-        )
-        .orderBy("ms_case")
-    )
-
-
-def _contour_cases_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _MS_RES)
-    anchor_list = ", ".join(
-        kring_neighbor_sql("o.cell", _MS_RES, str(-dx), str(-dy))
-        for dx, dy, _ in _MS_CORNERS
-    )
-    corner_joins = []
-    case_terms = []
-    for k, (dx, dy, bit) in enumerate(_MS_CORNERS):
-        nbr = kring_neighbor_sql("a.anchor", _MS_RES, str(dx), str(dy))
-        corner_joins.append(f"LEFT JOIN occ o{k} ON o{k}.cell = {nbr}")
-        case_terms.append(
-            f"CASE WHEN COALESCE(o{k}.cnt, 0) >= {_MS_TAU} THEN {bit} ELSE 0 END"
-        )
-    case = " + ".join(case_terms)
-    return f"""
-        WITH occ AS MATERIALIZED (
-            SELECT cell, COUNT(*) AS cnt
-            FROM (SELECT {cell} AS cell FROM documents) GROUP BY 1),
-        anchors AS (
-            SELECT DISTINCT anchor FROM (
-                SELECT UNNEST([{anchor_list}]) AS anchor
-                FROM occ o)
-            WHERE anchor IS NOT NULL),
-        cased AS (
-            SELECT {case} AS ms_case
-            FROM anchors a
-            {' '.join(corner_joins)})
-        SELECT ms_case, COUNT(*) AS n_blocks,
-               CAST(COUNT(*) * (CASE WHEN ms_case IN (5, 10) THEN 2 ELSE 1 END)
-                    AS BIGINT) AS n_segments
-        FROM cased WHERE ms_case NOT IN (0, 15)
-        GROUP BY 1 ORDER BY ms_case
-    """
-
-
-# ---------------------------------------------------------------------------
-# region vectorization: per-segment bounding boxes (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_region_bboxes(spark, sf_dir):
-    """Vectorize the raster segments of `cell_segmentation` into bounding
-    boxes: per equal-density region, cell count and integer (x, y) bbox
-    corners plus the exact fill ratio n_cells/bbox-area — the
-    region→geometry handoff a vector tile layer consumes. Top-10 regions
-    by size; all arithmetic integer except the final exact-ratio round."""
-    from raptor_service_spark.operators.mst import cell_edges, graph_components
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(lat.alias("lat"), lng.alias("lng"))
-    nodes = (
-        pts.select(
-            cell_encode_col(F.col("lat"), F.col("lng"), _SEG_RES).alias("cell")
-        )
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    edges = cell_edges(pts, _SEG_RES).filter(F.col("w") <= _SEG_MAXW)
-    comps = graph_components(edges, rounds=_MST_ROUNDS, nodes=nodes)
-    n = 1 << _SEG_RES
-    base = _SEG_RES * (2**54)
-    rem = F.col("cell") - F.lit(base)
-    y = F.floor(rem / n).cast("long")
-    x = (rem - y * n).cast("long")
-    g = comps.select(F.col("comp").alias("segment"), x.alias("x"), y.alias("y"))
-    agg = g.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        F.min("x").alias("x0"),
-        F.max("x").alias("x1"),
-        F.min("y").alias("y0"),
-        F.max("y").alias("y1"),
-    )
-    area = (F.col("x1") - F.col("x0") + 1) * (F.col("y1") - F.col("y0") + 1)
-    return (
-        agg.select(
-            "segment",
-            "n_cells",
-            "x0",
-            "x1",
-            "y0",
-            "y1",
-            F.round(F.col("n_cells") / area.cast("double"), 6).alias("fill"),
-        )
-        .orderBy(F.col("n_cells").desc(), "segment")
-        .limit(10)
-    )
-
-
-def _region_bboxes_sql() -> str:
-    from raptor_service_spark.operators.mst import boruvka_mst_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    comps = boruvka_mst_sql(
-        f"SELECT {lat} AS lat, {lng} AS lng FROM documents",
-        _SEG_RES,
-        rounds=_MST_ROUNDS,
-        jumps=_MST_JUMPS,
-        max_w=_SEG_MAXW,
-        final="components",
-    )
-    n = 1 << _SEG_RES
-    base = _SEG_RES * (2**54)
-    return f"""
-        WITH g AS (
-            SELECT comp AS segment,
-                   CAST(FLOOR((cell - {base}) / {n}) AS BIGINT) AS y,
-                   CAST((cell - {base}) - CAST(FLOOR((cell - {base}) / {n})
-                        AS BIGINT) * {n} AS BIGINT) AS x
-            FROM ({comps})),
-        agg AS (
-            SELECT segment, COUNT(*) AS n_cells,
-                   MIN(x) AS x0, MAX(x) AS x1, MIN(y) AS y0, MAX(y) AS y1
-            FROM g GROUP BY 1)
-        SELECT segment, n_cells, x0, x1, y0, y1,
-               ROUND(n_cells / CAST((x1 - x0 + 1) * (y1 - y0 + 1) AS DOUBLE), 6)
-                   AS fill
-        FROM agg
-        ORDER BY n_cells DESC, segment
-        LIMIT 10
-    """
-
-
-# ---------------------------------------------------------------------------
-# ER blocking-quality evaluation (session 11)
-# ---------------------------------------------------------------------------
-
-_BQ_PFX = 24
-
-
-def q_blocking_quality(spark, sf_dir):
-    """Entity-resolution blocking evaluation on the planted-duplicate
-    corpus: candidates = same-24-char-prefix blocks (the key the SNM and
-    ROUGE stages use), ground truth = the planted (doc, doc+10⁶) twins.
-    Reports the two standard blocking metrics — REDUCTION RATIO
-    1 − |candidates|/C(n,2) (how much of the quadratic the key kills) and
-    PAIRS COMPLETENESS |cand ∩ truth|/|truth| (what recall survived) —
-    the audit that justifies every dedup blocking key before it ships.
-    Exact integer ratios; candidate pairs stay inside blocks."""
-    d = _docs_with_dups(spark, sf_dir)
-    keyed = d.select(
-        "doc_id", F.substring(F.trim(F.col("text")), 1, _BQ_PFX).alias("k")
-    )
-    blocks = keyed.groupBy("k").agg(
-        F.count(F.lit(1)).alias("m"),
-        F.sum((F.col("doc_id") < 1000000).cast("long")).alias("lo"),
-        F.sum((F.col("doc_id") >= 1000000).cast("long")).alias("hi"),
-    )
-    # candidate pairs per block = C(m,2); true pairs caught per block:
-    # a planted twin shares its block iff both halves land in it, and
-    # twins have IDENTICAL text, so per block that's min over the halves
-    # of matching ids — exact: count of ids i with both i and i+1e6 in
-    # the block. Identical text ⇒ same key ⇒ both in the same block, so
-    # caught = number of lo ids whose twin exists = lo (every planted
-    # twin shares the key). Kept verifiable: caught computed by a real
-    # self-join rather than assumed.
-    pairs = keyed.alias("a").join(
-        keyed.alias("b"),
-        (F.col("a.k") == F.col("b.k"))
-        & (F.col("a.doc_id") + 1000000 == F.col("b.doc_id")),
-    )
-    caught = pairs.agg(F.count(F.lit(1)).alias("caught"))
-    tot = keyed.agg(F.count(F.lit(1)).alias("n"))
-    truth = keyed.filter(F.col("doc_id") < 1000000).agg(
-        F.count(F.lit(1)).alias("n_truth")
-    )
-    cand = blocks.agg(
-        F.sum(F.col("m") * (F.col("m") - 1) / 2).cast("long").alias("n_cand")
-    )
-    return (
-        cand.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(truth))
-        .crossJoin(F.broadcast(caught))
-        .select(
-            "n_cand",
-            "n_truth",
-            "caught",
-            F.round(
-                F.lit(1.0)
-                - F.col("n_cand")
-                / (F.col("n") * (F.col("n") - 1) / F.lit(2.0)),
-                6,
-            ).alias("reduction_ratio"),
-            F.round(F.col("caught") / F.col("n_truth").cast("double"), 6).alias(
-                "pairs_completeness"
-            ),
-        )
-    )
-
-
-def _blocking_quality_sql() -> str:
-    return f"""
-        WITH d AS (SELECT doc_id, text FROM {_DOCS_WITH_DUPS_SQL} t),
-        keyed AS (SELECT doc_id, substr(trim(text), 1, {_BQ_PFX}) AS k FROM d),
-        blocks AS (SELECT k, COUNT(*) AS m FROM keyed GROUP BY 1),
-        cand AS (SELECT CAST(SUM(m * (m - 1) / 2) AS BIGINT) AS n_cand
-                 FROM blocks),
-        tot AS (SELECT COUNT(*) AS n FROM keyed),
-        truth AS (SELECT COUNT(*) AS n_truth FROM keyed
-                  WHERE doc_id < 1000000),
-        caught AS (SELECT COUNT(*) AS caught
-                   FROM keyed a JOIN keyed b
-                     ON a.k = b.k AND a.doc_id + 1000000 = b.doc_id)
-        SELECT cand.n_cand, truth.n_truth, caught.caught,
-               ROUND(1.0 - cand.n_cand / (tot.n * (tot.n - 1) / 2.0), 6)
-                   AS reduction_ratio,
-               ROUND(caught.caught / CAST(truth.n_truth AS DOUBLE), 6)
-                   AS pairs_completeness
-        FROM cand CROSS JOIN tot CROSS JOIN truth CROSS JOIN caught
-    """
-
-
-# ---------------------------------------------------------------------------
-# decision stump: best Gini split (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_decision_stump(spark, sf_dir):
-    """Train a one-node decision tree: the n_chars threshold minimizing
-    weighted Gini impurity for the (lang = 'en') label — the split-finding
-    primitive inside every distributed tree learner (and the shape Spark
-    MLlib's histogram-based splitter distributes). Relational: sort the
-    distinct feature values once, prefix sums give left/right class
-    counts at EVERY candidate split in one window pass — no per-split
-    rescan. Exact integer counts; impurities are exact ratios pre-rounded
-    9 dp; argmin tie-breaks to the smallest threshold."""
-    from pyspark.sql import Window
-
-    d = _read(spark, sf_dir, "documents").select(
-        "n_chars", (F.col("lang") == "en").cast("long").alias("y")
-    )
-    per_v = d.groupBy("n_chars").agg(
-        F.count(F.lit(1)).alias("m"), F.sum("y").alias("pos")
-    )
-    w = Window.orderBy("n_chars").rowsBetween(Window.unboundedPreceding, 0)
-    pre = per_v.select(
-        "n_chars",
-        F.sum("m").over(w).alias("nl"),
-        F.sum("pos").over(w).alias("pl"),
-    )
-    tot = per_v.agg(F.sum("m").alias("n"), F.sum("pos").alias("p"))
-    s = pre.crossJoin(F.broadcast(tot)).filter(F.col("nl") < F.col("n"))
-    nl, pl = F.col("nl").cast("double"), F.col("pl").cast("double")
-    nr = (F.col("n") - F.col("nl")).cast("double")
-    pr = (F.col("p") - F.col("pl")).cast("double")
-    gl = 1.0 - (pl / nl) * (pl / nl) - ((nl - pl) / nl) * ((nl - pl) / nl)
-    gr = 1.0 - (pr / nr) * (pr / nr) - ((nr - pr) / nr) * ((nr - pr) / nr)
-    gini = F.round((nl * gl + nr * gr) / F.col("n").cast("double"), 9)
-    scored = s.select(
-        F.col("n_chars").alias("threshold"),
-        F.col("nl").alias("n_left"),
-        F.col("pl").alias("pos_left"),
-        gini.alias("gini"),
-    )
-    best = scored.agg(
-        F.min(F.struct("gini", "threshold", "n_left", "pos_left")).alias("b")
-    )
-    return best.select(
-        F.col("b.threshold").alias("threshold"),
-        F.col("b.n_left").alias("n_left"),
-        F.col("b.pos_left").alias("pos_left"),
-        F.round(F.col("b.gini"), 6).alias("gini"),
-    )
-
-
-def _decision_stump_sql() -> str:
-    return """
-        WITH d AS (SELECT n_chars, CAST(lang = 'en' AS BIGINT) AS y
-                   FROM documents),
-        per_v AS (SELECT n_chars, COUNT(*) AS m, SUM(y) AS pos
-                  FROM d GROUP BY 1),
-        pre AS (SELECT n_chars,
-                       SUM(m) OVER (ORDER BY n_chars) AS nl,
-                       SUM(pos) OVER (ORDER BY n_chars) AS pl
-                FROM per_v),
-        tot AS (SELECT SUM(m) AS n, SUM(pos) AS p FROM per_v),
-        s AS (SELECT pre.n_chars, pre.nl, pre.pl, tot.n, tot.p
-              FROM pre CROSS JOIN tot WHERE pre.nl < tot.n),
-        scored AS (SELECT n_chars AS threshold, nl AS n_left,
-                          pl AS pos_left,
-                          ROUND((CAST(nl AS DOUBLE)
-                                   * (1.0
-                                      - (CAST(pl AS DOUBLE) / nl)
-                                        * (CAST(pl AS DOUBLE) / nl)
-                                      - (CAST(nl - pl AS DOUBLE) / nl)
-                                        * (CAST(nl - pl AS DOUBLE) / nl))
-                               + CAST(n - nl AS DOUBLE)
-                                   * (1.0
-                                      - (CAST(p - pl AS DOUBLE) / (n - nl))
-                                        * (CAST(p - pl AS DOUBLE) / (n - nl))
-                                      - (CAST(n - nl - (p - pl) AS DOUBLE)
-                                         / (n - nl))
-                                        * (CAST(n - nl - (p - pl) AS DOUBLE)
-                                           / (n - nl))))
-                                / CAST(n AS DOUBLE), 9) AS gini
-                   FROM s),
-        best AS (SELECT MIN(struct_pack(gini := gini, threshold := threshold,
-                                        n_left := n_left,
-                                        pos_left := pos_left)) AS b
-                 FROM scored)
-        SELECT CAST(b.threshold AS BIGINT) AS threshold,
-               CAST(b.n_left AS BIGINT) AS n_left,
-               CAST(b.pos_left AS BIGINT) AS pos_left,
-               ROUND(b.gini, 6) AS gini
-        FROM best
-    """
-
-
-# ---------------------------------------------------------------------------
-# entropy-regularized optimal transport (Sinkhorn) (session 11)
-# ---------------------------------------------------------------------------
-
-_OT_RES, _OT_K, _OT_EPS, _OT_ROUNDS = 2, 8, 20.0, 3
-
-
-def q_ot_transport_plan(spark, sf_dir):
-    """Entropy-regularized optimal transport between the DOCUMENT and
-    EVENT density distributions over their top-8 res-2 cells: Sinkhorn
-    iterations (3 rounds, unrolled identically in both engines) on
-    K = exp(−cost/ε) with degree-space center distances — the
-    distribution-alignment operator behind domain-shift measurement and
-    OT-based dataset reweighting (how much mass must move WHERE, not just
-    how much the histograms differ à la `jsd_sources`). The plan is
-    bounded 8×8 by construction; marginals are exact integer ratios;
-    u/v pre-rounded 9 dp per round (the kmeans/plsa unroll discipline).
-    Output: the 64-entry transport plan with costs and masses."""
-    from raptor_service_spark.geo.grid import cell_center_sql
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat_d, lng_d = _latlng_cols(F.col("doc_id"))
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat_e, lng_e = _latlng_cols(F.col("event_id"))
-
-    def top8(pts_cell):
-        top = (
-            pts_cell.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.col("cnt").desc(), "cell")
-            .limit(_OT_K)
-        )
-        tot = top.agg(F.sum("cnt").alias("tot"))
-        clat, clng = cell_center_sql("cell", _OT_RES)
-        return (
-            top.crossJoin(F.broadcast(tot))
-            .select(
-                "cell",
-                (F.col("cnt") / F.col("tot")).alias("w"),
-                F.expr(clat).alias("clat"),
-                F.expr(clng).alias("clng"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    a = top8(d.select(cell_encode_col(lat_d, lng_d, _OT_RES).alias("cell")))
-    b = top8(ev.select(cell_encode_col(lat_e, lng_e, _OT_RES).alias("cell")))
-    aa = a.select(
-        F.col("cell").alias("ca"),
-        F.col("w").alias("wa"),
-        F.col("clat").alias("ya"),
-        F.col("clng").alias("xa"),
-    )
-    bb = b.select(
-        F.col("cell").alias("cb"),
-        F.col("w").alias("wb"),
-        F.col("clat").alias("yb"),
-        F.col("clng").alias("xb"),
-    )
-    dx = F.col("xa") - F.col("xb")
-    dy = F.col("ya") - F.col("yb")
-    K = (
-        aa.crossJoin(F.broadcast(bb))
-        .select(
-            "ca",
-            "cb",
-            "wa",
-            "wb",
-            F.round(F.sqrt(dx * dx + dy * dy), 6).alias("cost"),
-        )
-        .withColumn("k", F.exp(-F.col("cost") / F.lit(_OT_EPS)))
-        .localCheckpoint(eager=True)
-    )
-    u = aa.select("ca", F.lit(1.0).alias("u"))
-    v = None
-    for _ in range(_OT_ROUNDS):
-        v = (
-            K.join(F.broadcast(u), "ca")
-            .groupBy("cb", "wb")
-            .agg(F.sum(F.round(F.col("k") * F.col("u"), 9)).alias("s"))
-            .select("cb", F.round(F.col("wb") / F.col("s"), 9).alias("v"))
-        )
-        u = (
-            K.join(F.broadcast(v), "cb")
-            .groupBy("ca", "wa")
-            .agg(F.sum(F.round(F.col("k") * F.col("v"), 9)).alias("s"))
-            .select("ca", F.round(F.col("wa") / F.col("s"), 9).alias("u"))
-        )
-    return (
-        K.join(F.broadcast(u), "ca")
-        .join(F.broadcast(v), "cb")
-        .select(
-            F.col("ca").alias("cell_a"),
-            F.col("cb").alias("cell_b"),
-            "cost",
-            F.round(F.col("u") * F.col("k") * F.col("v"), 6).alias("mass"),
-        )
-        .orderBy("cell_a", "cell_b")
-    )
-
-
-def _ot_transport_plan_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_center_sql
-
-    lat_d, lng_d = _latlng_sql("doc_id")
-    lat_e, lng_e = _latlng_sql("event_id")
-    cell_d = cell_encode_sql(lat_d, lng_d, _OT_RES)
-    cell_e = cell_encode_sql(lat_e, lng_e, _OT_RES)
-    clat, clng = cell_center_sql("cell", _OT_RES)
-    rounds = []
-    pu, pv = "u0", None
-    for r in range(1, _OT_ROUNDS + 1):
-        rounds.append(
-            f"""v{r} AS (
-               SELECT K.cb, ROUND(MAX(K.wb) / SUM(ROUND(K.k * {pu}.u, 9)), 9)
-                          AS v
-               FROM K JOIN {pu} ON K.ca = {pu}.ca GROUP BY K.cb)"""
-        )
-        rounds.append(
-            f"""u{r} AS (
-               SELECT K.ca, ROUND(MAX(K.wa) / SUM(ROUND(K.k * v{r}.v, 9)), 9)
-                          AS u
-               FROM K JOIN v{r} ON K.cb = v{r}.cb GROUP BY K.ca)"""
-        )
-        pu, pv = f"u{r}", f"v{r}"
-    chain = ",\n        ".join(rounds)
-    return f"""
-        WITH da AS (SELECT {cell_d} AS cell FROM documents),
-        db AS (SELECT {cell_e} AS cell FROM events),
-        ta AS (SELECT cell, COUNT(*) AS cnt FROM da GROUP BY 1
-               ORDER BY cnt DESC, cell LIMIT {_OT_K}),
-        tb AS (SELECT cell, COUNT(*) AS cnt FROM db GROUP BY 1
-               ORDER BY cnt DESC, cell LIMIT {_OT_K}),
-        a AS (SELECT cell AS ca, cnt / CAST(tot AS DOUBLE) AS wa,
-                     {clat} AS ya, {clng} AS xa
-              FROM ta CROSS JOIN (SELECT SUM(cnt) AS tot FROM ta)),
-        b AS (SELECT cell AS cb, cnt / CAST(tot AS DOUBLE) AS wb,
-                     {clat} AS yb, {clng} AS xb
-              FROM tb CROSS JOIN (SELECT SUM(cnt) AS tot FROM tb)),
-        K AS MATERIALIZED (
-            SELECT ca, cb, wa, wb,
-                   ROUND(SQRT((xa - xb) * (xa - xb)
-                            + (ya - yb) * (ya - yb)), 6) AS cost,
-                   EXP(-ROUND(SQRT((xa - xb) * (xa - xb)
-                                 + (ya - yb) * (ya - yb)), 6)
-                       / {_OT_EPS!r}) AS k
-            FROM a CROSS JOIN b),
-        u0 AS (SELECT ca, 1.0 AS u FROM a),
-        {chain}
-        SELECT K.ca AS cell_a, K.cb AS cell_b, K.cost,
-               ROUND({pu}.u * K.k * {pv}.v, 6) AS mass
-        FROM K JOIN {pu} ON K.ca = {pu}.ca JOIN {pv} ON K.cb = {pv}.cb
-        ORDER BY cell_a, cell_b
-    """
-
-
-# ---------------------------------------------------------------------------
-# interleaved media run-lengths (session 11)
-# ---------------------------------------------------------------------------
-
-
-def q_media_run_lengths(spark, sf_dir):
-    """Run-length structure of the INTERLEAVED corpus: consecutive spans
-    of the same class (media vs text) form runs (gaps-and-islands on the
-    span index), histogrammed by class and length — the layout statistic
-    that tells a packing/rendering stage whether media arrives as
-    galleries (long media runs) or inline singletons. Deterministic
-    generator corpus; the oracle replays the generator as golden VALUES
-    (the span_position_profile technique). All-integer."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.datagen import gen_documents_df
-
-    docs = gen_documents_df(spark, 200, seed=31)
-    spans = docs.select(
-        "doc_id", F.posexplode(F.col("spans")).alias("j", "s")
-    ).select(
-        "doc_id", "j", (F.col("s.media_ref") != "").cast("int").alias("m")
-    )
-    w = Window.partitionBy("doc_id", "m").orderBy("j")
-    runs = (
-        spans.withColumn("grp", F.col("j") - F.row_number().over(w))
-        .groupBy("doc_id", "m", "grp")
-        .agg(F.count(F.lit(1)).alias("run_len"))
-    )
-    return (
-        runs.groupBy("m", "run_len")
-        .agg(F.count(F.lit(1)).alias("n_runs"))
-        .select(
-            F.col("m").alias("is_media"),
-            F.col("run_len"),
-            "n_runs",
-        )
-        .orderBy("is_media", "run_len")
-    )
-
-
-def _media_run_lengths_sql(n_docs: int = 200, seed: int = 31) -> str:
-    from raptor_service_spark.datagen import _gen_doc, doc_id_for
-
-    rows = []
-    for i in range(n_docs):
-        d = _gen_doc(seed, i)
-        did = doc_id_for(seed, i)
-        for j, s in enumerate(d["spans"]):
-            rows.append(f"('{did}', {j}, {1 if s['media_ref'] else 0})")
-    return f"""
-        WITH spans(doc_id, j, m) AS (VALUES {', '.join(rows)}),
-        runs AS (
-            SELECT doc_id, m,
-                   j - ROW_NUMBER() OVER (PARTITION BY doc_id, m
-                                          ORDER BY j) AS grp
-            FROM spans),
-        rl AS (SELECT doc_id, m, grp, COUNT(*) AS run_len
-               FROM runs GROUP BY 1, 2, 3)
-        SELECT CAST(m AS INT) AS is_media, run_len, COUNT(*) AS n_runs
-        FROM rl GROUP BY 1, 2
-        ORDER BY is_media, run_len
-    """
-
-
-# ---------------------------------------------------------------------------
-# LRU tile-cache hit-rate simulation (session 11)
-# ---------------------------------------------------------------------------
-
-_LRU_CAP, _LRU_USERS = 4, 12
-
-
-def _lru_step(dialect: str) -> str:
-    """One LRU transition as a single expression, generated for both
-    engines from this one source (the kalman/holt fold technique). The
-    accumulator is [hits, mru .. lru] (BIGINT list); elements arrive as
-    1-element lists so DuckDB's list_reduce sees uniform list types."""
-    if dialect == "spark":
-        acc, el = "acc", "element_at(el, 1)"
-        cache = "slice(acc, 2, 100000)"
-        contains = f"array_contains({cache}, {el})"
-        hits = "element_at(acc, 1)"
-        hit_new = (
-            f"concat(array({hits} + 1L, {el}), "
-            f"filter({cache}, x -> x != {el}))"
-        )
-        miss_new = (
-            f"concat(array({hits}, {el}), slice({cache}, 1, {_LRU_CAP - 1}))"
-        )
-    else:
-        el = "el[1]"
-        cache = "list_slice(acc, 2, 100000)"
-        contains = f"list_contains({cache}, {el})"
-        hits = "acc[1]"
-        hit_new = (
-            f"list_concat([{hits} + 1, {el}], "
-            f"list_filter({cache}, x -> x != {el}))"
-        )
-        miss_new = (
-            f"list_concat([{hits}, {el}], list_slice({cache}, 1, {_LRU_CAP - 1}))"
-        )
-    return f"CASE WHEN {contains} THEN {hit_new} ELSE {miss_new} END"
-
-
-def q_lru_hit_rate(spark, sf_dir):
-    """LRU tile-cache simulation: replay each user's event-cell request
-    stream (ts order) through an exact capacity-{cap} LRU and report the
-    per-user hit rate — the cache-sizing measurement behind a tile
-    server's memory budget (compulsory misses vs working-set reuse).
-    The whole simulation is ONE ordered array fold per user (aggregate ↔
-    list_reduce, step generated from one source — `_lru_step`); state
-    is the [hits, mru..lru] integer list, so there is no float anywhere
-    until the final exact hit ratio. One collect_list shuffle."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    reqs = (
-        ev.filter(F.col("user_id") < _LRU_USERS)
-        .select(
-            "user_id",
-            F.struct(
-                F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-                F.col("event_id").alias("e"),
-                cell_encode_col(lat, lng, 3).alias("c"),
-            ).alias("s"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list("s")), lambda s: s["c"]
-            ).alias("cells")
-        )
-    )
-    folded = reqs.withColumn(
-        "res",
-        F.expr(
-            "aggregate(transform(cells, c -> array(c)), "
-            f"array(CAST(0 AS BIGINT)), (acc, el) -> {_lru_step('spark')})"
-        ),
-    )
-    return folded.select(
-        "user_id",
-        F.size("cells").alias("n_requests"),
-        F.element_at("res", 1).alias("n_hits"),
-        F.round(
-            F.element_at("res", 1) / F.size("cells").cast("double"), 6
-        ).alias("hit_rate"),
-    ).orderBy("user_id")
-
-
-def _lru_hit_rate_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH reqs AS (
-            SELECT user_id,
-                   LIST({cell} ORDER BY ts, event_id) AS cells
-            FROM events WHERE user_id < {_LRU_USERS}
-            GROUP BY 1),
-        folded AS (
-            SELECT user_id, cells,
-                   list_reduce(
-                       list_prepend([CAST(0 AS BIGINT)],
-                                    list_transform(cells, c -> [c])),
-                       (acc, el) -> {_lru_step('duck')}) AS res
-            FROM reqs)
-        SELECT user_id, CAST(len(cells) AS INT) AS n_requests,
-               res[1] AS n_hits,
-               ROUND(res[1] / CAST(len(cells) AS DOUBLE), 6) AS hit_rate
-        FROM folded ORDER BY user_id
-    """
-
-
-# ---------------------------------------------------------------------------
-# positional retrieval: exact phrase search + minimal cover window (session 12)
-# ---------------------------------------------------------------------------
-
-_PHRASE = ("sort", "merge")
-
-
-def q_phrase_search(spark, sf_dir):
-    """Exact phrase search ("sort merge") via positional postings — the
-    inverted-index leg BM25 can't serve (bag-of-words loses adjacency).
-    Relational shape: tokenize once, keep ONLY the two query terms'
-    postings (selective — the filter reaches the scan), then ONE
-    (doc_id, position+1) equi-join pins adjacency; per-doc counts and a
-    global top-20. At 100 TB the postings table is the precomputed index
-    and the join is partition-pruned by term; nothing here is per-row
-    Python. Top-20 docs by occurrence count (tie: doc_id)."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("p", "w"),
-    ).filter(F.col("w").isin(*_PHRASE))
-    a = (
-        toks.filter(F.col("w") == _PHRASE[0])
-        .select("doc_id", F.col("p").alias("p0"))
-        .alias("pa")
-    )
-    b = (
-        toks.filter(F.col("w") == _PHRASE[1])
-        .select("doc_id", F.col("p").alias("p1"))
-        .alias("pb")
-    )
-    hits = a.join(
-        b,
-        (F.col("pa.doc_id") == F.col("pb.doc_id"))
-        & (F.col("p1") == F.col("p0") + 1),
-    ).select(F.col("pa.doc_id").alias("doc_id"), "p0")
-    return (
-        hits.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
-        .orderBy(F.col("n_occurrences").desc(), "doc_id")
-        .limit(20)
-    )
-
-
-def _phrase_search_sql() -> str:
-    return f"""
-        WITH t AS (SELECT doc_id,
-                          regexp_split_to_array(trim(text), '\\s+') AS arr
-                   FROM documents),
-        toks AS (SELECT doc_id, u.p, u.w
-                 FROM (SELECT doc_id,
-                              UNNEST(list_transform(range(1, len(arr) + 1),
-                                  i -> struct_pack(p := i - 1, w := arr[i])))
-                                  AS u
-                       FROM t)
-                 WHERE u.w IN ('{_PHRASE[0]}', '{_PHRASE[1]}')),
-        hits AS (SELECT a.doc_id
-                 FROM toks a JOIN toks b
-                   ON a.doc_id = b.doc_id AND b.p = a.p + 1
-                 WHERE a.w = '{_PHRASE[0]}' AND b.w = '{_PHRASE[1]}')
-        SELECT doc_id, COUNT(*) AS n_occurrences
-        FROM hits GROUP BY 1
-        ORDER BY n_occurrences DESC, doc_id LIMIT 20
-    """
-
-
-def q_min_cover_window(spark, sf_dir):
-    """Minimal cover window (proximity ranking): per document, the
-    SHORTEST token window containing ALL query terms — the proximity
-    signal ranking stacks blend with BM25 (closer co-occurrence = more
-    topical). Candidate starts are term-hit positions only (the optimal
-    window starts at a hit); for each start, each term's cover end is its
-    min position >= start (one grouped agg over the O(hits²)-bounded
-    hit-pair join — same bound as `best_passage`); a window is valid when
-    all terms are covered. Per-doc min width tie-breaks to the earliest
-    start. Top-20 docs by (width ASC, doc_id)."""
-    terms = list(_BM25_TERMS)
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    qt = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("p", "w"),
-    ).filter(F.col("w").isin(*terms))
-    a, b = qt.alias("a"), qt.alias("b")
-    per_term = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("b.p") >= F.col("a.p")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("a.p").alias("start"),
-            F.col("b.w").alias("w"),
-        )
-        .agg(F.min("b.p").alias("e"))
-    )
-    windows = (
-        per_term.groupBy("doc_id", "start")
-        .agg(F.count(F.lit(1)).alias("nt"), F.max("e").alias("fin"))
-        .filter(F.col("nt") == len(terms))
-        .select("doc_id", "start", (F.col("fin") - F.col("start") + 1).alias("width"))
-    )
-    best = windows.groupBy("doc_id").agg(
-        F.min(F.struct("width", "start")).alias("b")
-    )
-    return (
-        best.select(
-            "doc_id", F.col("b.width").alias("width"), F.col("b.start").alias("start")
-        )
-        .orderBy("width", "doc_id")
-        .limit(20)
-    )
-
-
-def _min_cover_window_sql() -> str:
-    terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
-    return f"""
-        WITH t AS (SELECT doc_id,
-                          regexp_split_to_array(trim(text), '\\s+') AS arr
-                   FROM documents),
-        qt AS (SELECT doc_id, u.p, u.w
-               FROM (SELECT doc_id,
-                            UNNEST(list_transform(range(1, len(arr) + 1),
-                                i -> struct_pack(p := i - 1, w := arr[i])))
-                                AS u
-                     FROM t)
-               WHERE u.w IN ({terms})),
-        per_term AS (SELECT a.doc_id, a.p AS start, b.w, MIN(b.p) AS e
-                     FROM qt a JOIN qt b
-                       ON a.doc_id = b.doc_id AND b.p >= a.p
-                     GROUP BY 1, 2, 3),
-        windows AS (SELECT doc_id, start,
-                           MAX(e) - start + 1 AS width
-                    FROM per_term GROUP BY doc_id, start
-                    HAVING COUNT(*) = {len(_BM25_TERMS)}),
-        best AS (SELECT doc_id,
-                        MIN(struct_pack(width := width, start := start)) AS b
-                 FROM windows GROUP BY 1)
-        SELECT doc_id, CAST(b.width AS INT) AS width,
-               CAST(b.start AS INT) AS start
-        FROM best ORDER BY width, doc_id LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# LCSS trajectory similarity (session 12)
-# ---------------------------------------------------------------------------
-
-_LCSS_EPS = 8.0  # degrees; squared threshold on resampled points
-
-
-def q_lcss_pairs(spark, sf_dir):
-    """LCSS trajectory similarity for the `dtw_pairs` 30-user cohort —
-    the noise-robust member of the trajectory-metric family (DTW pays for
-    every point, Hausdorff for the worst point; LCSS simply skips
-    outliers). Same resample + broadcast pair-join + anti-diagonal codegen
-    unroll as DTW, but the DP cells are INTEGERS, so cross-engine parity
-    is exact with no float protocol at all. See `operators/dtw.py`."""
-    from raptor_service_spark.operators.dtw import lcss_pairs, resample_traj
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "ts", "user_id")
-        .filter(F.col("user_id") < _DTW_COHORT)
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("lat", lat).withColumn("lng", lng)
-    return lcss_pairs(resample_traj(pts, _DTW_L), _DTW_L, _LCSS_EPS)
-
-
-def _lcss_pairs_sql() -> str:
-    from raptor_service_spark.operators.dtw import lcss_pairs_sql
-
-    lat, lng = _latlng_sql("event_id")
-    return lcss_pairs_sql(
-        f"(SELECT * FROM events WHERE user_id < {_DTW_COHORT}) ev",
-        _DTW_L,
-        _LCSS_EPS,
-        lat_expr=lat,
-        lng_expr=lng,
-    )
-
-
-# ---------------------------------------------------------------------------
-# readability scores (session 12)
-# ---------------------------------------------------------------------------
-
-_FRE_SENT_TOKENS = 12  # pseudo-sentence length (the texttiling block trick)
-
-
-def q_readability_scores(spark, sf_dir):
-    """Flesch reading-ease per document over PSEUDO-sentences (fixed
-    12-token blocks — the corpus has no sentence punctuation, the same
-    convention `texttiling_boundaries` uses) with the vowel-group syllable
-    heuristic: syllables = regexp count of [aeiou]+ runs (whitespace
-    breaks every run, so the doc-level count equals the per-word sum).
-    FRE = 206.835 − 1.015·words/sentences − 84.6·syllables/words — every
-    input an exact integer, the score one shared closed-form expression
-    (6 dp). Bottom-20 hardest docs (tie: doc_id) — the quality-filter leg
-    next to `doc_quality_top20`."""
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    base = d.select(
-        "doc_id",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("words"),
-        F.regexp_count(F.col("text"), F.lit(r"[aeiou]+")).cast("long").alias("syllables"),
-    ).withColumn(
-        "sentences",
-        F.ceil(F.col("words") / F.lit(_FRE_SENT_TOKENS)).cast("long"),
-    )
-    fre = F.round(
-        F.lit(206.835)
-        - F.lit(1.015) * (F.col("words") / F.col("sentences").cast("double"))
-        - F.lit(84.6) * (F.col("syllables") / F.col("words").cast("double")),
-        6,
-    )
-    return (
-        base.select("doc_id", "words", "sentences", "syllables", fre.alias("fre"))
-        .orderBy("fre", "doc_id")
-        .limit(20)
-    )
-
-
-def _readability_scores_sql() -> str:
-    return f"""
-        WITH base AS (
-            SELECT doc_id,
-                   len(regexp_split_to_array(trim(text), '\\s+')) AS words,
-                   len(regexp_extract_all(text, '[aeiou]+')) AS syllables
-            FROM documents),
-        s AS (SELECT doc_id, words, syllables,
-                     CAST(CEIL(words / CAST({_FRE_SENT_TOKENS} AS DOUBLE))
-                          AS BIGINT) AS sentences
-              FROM base)
-        SELECT doc_id, CAST(words AS INT) AS words, sentences,
-               CAST(syllables AS BIGINT) AS syllables,
-               ROUND(206.835
-                     - 1.015 * (words / CAST(sentences AS DOUBLE))
-                     - 84.6 * (syllables / CAST(words AS DOUBLE)), 6) AS fre
-        FROM s ORDER BY fre, doc_id LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# box-counting fractal dimension (session 12)
-# ---------------------------------------------------------------------------
-
-_BOX_RES = (1, 2, 3, 4, 5, 6)
-
-
-def q_box_counting_dim(spark, sf_dir):
-    """Box-counting (Minkowski) fractal dimension of the document point
-    set: occupied-cell counts N(r) on the res 1..6 grid ladder, dimension
-    = OLS slope of ln N(r) against r·ln 2 (uniform scatter → ~2; points
-    on a curve → ~1; heavy clustering → lower) — the spatial-complexity
-    scalar planners use to pick tiling depth. Scale shape: ONE encode at
-    the finest res, parents by integer arithmetic, one distinct-agg per
-    res over an exploded 6-entry ladder — never a rescan per res. OLS
-    follows the `heaps_law` float protocol (ln terms + sums 9 dp, closed
-    form last); x-sums over r = 1..6 are exact literals."""
-    import math
-
-    from raptor_service_spark.geo.grid import cell_encode_col, cell_parent_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    top = max(_BOX_RES)
-    enc = d.select(cell_encode_col(lat, lng, top).alias(f"c{top}"))
-    ladder = enc.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("res"),
-                        (
-                            F.col(f"c{top}")
-                            if r == top
-                            else cell_parent_col(F.col(f"c{top}"), top, r)
-                        ).alias("cell"),
-                    )
-                    for r in _BOX_RES
-                ]
-            )
-        ).alias("s")
-    ).select("s.res", "s.cell")
-    counts = ladder.groupBy("res").agg(F.countDistinct("cell").alias("n_cells"))
-    n = len(_BOX_RES)
-    sr = sum(_BOX_RES)
-    srr = sum(r * r for r in _BOX_RES)
-    xy = counts.select(
-        "res", "n_cells", F.log(F.col("n_cells").cast("double")).alias("y")
-    )
-    sums = xy.agg(
-        F.round(F.sum("y"), 9).alias("sy"),
-        F.round(F.sum(F.col("res") * F.col("y")), 9).alias("sry"),
-    )
-    slope = (F.lit(float(n)) * F.col("sry") - F.lit(float(sr)) * F.col("sy")) / F.lit(
-        float(n * srr - sr * sr)
-    )
-    dim = sums.select(
-        F.round(slope / F.lit(math.log(2.0)), 6).alias("fractal_dim")
-    )
-    return (
-        counts.crossJoin(F.broadcast(dim))
-        .select("res", "n_cells", "fractal_dim")
-        .orderBy("res")
-    )
-
-
-def _box_counting_dim_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    top = max(_BOX_RES)
-    c_top = cell_encode_sql(lat, lng, top)
-    arms = " UNION ALL ".join(
-        f"SELECT {r} AS res, "
-        + (c_top if r == top else cell_parent_sql(c_top, top, r))
-        + " AS cell FROM documents"
-        for r in _BOX_RES
-    )
-    n = len(_BOX_RES)
-    sr = sum(_BOX_RES)
-    srr = sum(r * r for r in _BOX_RES)
-    return f"""
-        WITH ladder AS ({arms}),
-        counts AS (SELECT res, COUNT(DISTINCT cell) AS n_cells
-                   FROM ladder GROUP BY 1),
-        xy AS (SELECT res, n_cells, LN(CAST(n_cells AS DOUBLE)) AS y
-               FROM counts),
-        sums AS (SELECT ROUND(SUM(y), 9) AS sy,
-                        ROUND(SUM(res * y), 9) AS sry
-                 FROM xy),
-        dim AS (SELECT ROUND((({n}.0 * sry - {sr}.0 * sy)
-                              / {float(n * srr - sr * sr)!r}) / LN(2.0), 6)
-                           AS fractal_dim
-                FROM sums)
-        SELECT res, n_cells, fractal_dim
-        FROM counts CROSS JOIN dim
-        ORDER BY res
-    """
-
-
-# ---------------------------------------------------------------------------
-# Spearman rank correlation (session 12)
-# ---------------------------------------------------------------------------
-
-_SPEARMAN_N = 100000  # bound keeps doubled-rank square-sums within 2^53
-
-
-def q_spearman_corr(spark, sf_dir):
-    """Spearman rank correlation between event value and latitude —
-    the monotone-association screen Pearson (`value_correlations`) misses
-    when the relationship is nonlinear. Tie-safe: average ranks enter as
-    EXACT doubled integers (2·avg_rank = 2·RANK() + tie_count − 1), every
-    aggregate is an exact BIGINT (bounded cohort keeps Σ(2r)² < 2^53),
-    and only the final closed form runs in float — identical expression
-    both engines, no summation-order exposure at all. One row: rho 6 dp."""
-    from pyspark.sql import Window
-
-    ev = (
-        _read(spark, sf_dir, "events")
-        .select("event_id", "value")
-        .filter(F.col("event_id") < _SPEARMAN_N)
-    )
-    lat, _lng = _latlng_cols(F.col("event_id"))
-    base = ev.select(F.col("value").alias("v"), lat.alias("g"))
-
-    def dbl_rank_join(df, col_name, out):
-        # 2·avg_rank as exact integers WITHOUT any row-level window:
-        # RANK(v) = (#rows with value < v) + 1 and the tie count is the
-        # value's group size, so per-VALUE counts + a cumulative offset
-        # over the O(distinct values) aggregate give
-        # 2·RANK + ties − 1 = 2·(offset+1) + cnt − 1 directly.
-        cnts = df.groupBy(col_name).agg(F.count(F.lit(1)).alias("_c"))
-        wb = Window.orderBy(col_name).rowsBetween(Window.unboundedPreceding, -1)
-        off = cnts.withColumn(
-            "_o", F.coalesce(F.sum("_c").over(wb), F.lit(0))
-        )
-        return df.join(F.broadcast(off), col_name).withColumn(
-            out,
-            (F.lit(2) * (F.col("_o") + 1) + F.col("_c") - F.lit(1)).cast("long"),
-        ).drop("_c", "_o")
-
-    ranked = dbl_rank_join(dbl_rank_join(base, "v", "x"), "g", "y").select("x", "y")
-    s = ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    nd = F.col("n").cast("double")
-    num = nd * F.col("sxy").cast("double") - F.col("sx").cast("double") * F.col(
-        "sy"
-    ).cast("double")
-    den = F.sqrt(
-        nd * F.col("sxx").cast("double")
-        - F.col("sx").cast("double") * F.col("sx").cast("double")
-    ) * F.sqrt(
-        nd * F.col("syy").cast("double")
-        - F.col("sy").cast("double") * F.col("sy").cast("double")
-    )
-    return s.select("n", F.round(num / den, 6).alias("rho"))
-
-
-def _spearman_corr_sql() -> str:
-    lat, _lng = _latlng_sql("event_id")
-    return f"""
-        WITH base AS (SELECT value AS v, {lat} AS g
-                      FROM events WHERE event_id < {_SPEARMAN_N}),
-        ranked AS (SELECT
-            CAST(2 * RANK() OVER (ORDER BY v)
-                 + COUNT(*) OVER (PARTITION BY v) - 1 AS BIGINT) AS x,
-            CAST(2 * RANK() OVER (ORDER BY g)
-                 + COUNT(*) OVER (PARTITION BY g) - 1 AS BIGINT) AS y
-            FROM base),
-        s AS (SELECT COUNT(*) AS n, SUM(x) AS sx, SUM(y) AS sy,
-                     SUM(x * x) AS sxx, SUM(y * y) AS syy,
-                     SUM(x * y) AS sxy
-              FROM ranked)
-        SELECT n,
-               ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-                     / (SQRT(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                             - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-                        * SQRT(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-                               - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6)
-                   AS rho
-        FROM s
-    """
-
-
-# ---------------------------------------------------------------------------
-# reverse-NN influence set (session 12)
-# ---------------------------------------------------------------------------
-
-_RNN_Q = (-80.0, -140.0)  # (lat, lng); non-empty influence set at every SF
-_RNN_COHORT = 4000
-
-
-def q_rnn_influence(spark, sf_dir):
-    """Reverse-nearest-neighbor influence set of a candidate facility Q:
-    the documents that would adopt Q as their NEW nearest neighbor, i.e.
-    dist(d, Q) < dist(d, d's current nearest other document) — the
-    bichromatic RNN query behind facility placement and cache-node
-    election. Spark path: per-doc exact NN distance from the ring-doubling
-    self-join (`nn_distances` — each round shuffles unresolved points ×
-    cover cells, never doc × doc) + one codegen distance to Q. The oracle
-    brute-forces the bounded cohort. Both engines compare UNROUNDED
-    distances computed by the same single expression (IEEE sqrt is
-    correctly rounded — identical bits), so the strict < is parity-safe;
-    display values round 6 dp. Ordered by distance to Q."""
-    from raptor_service_spark.operators.geo_knn import nn_distances
-
-    d = (
-        _read(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < _RNN_COHORT)
-    )
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(F.col("doc_id").alias("pid"), lng.alias("px"), lat.alias("py"))
-    nn = nn_distances(pts, res=4, max_ring=64)
-    qd = pts.select(
-        "pid",
-        "px",
-        "py",
-        F.sqrt(
-            (F.col("px") - F.lit(_RNN_Q[1])) * (F.col("px") - F.lit(_RNN_Q[1]))
-            + (F.col("py") - F.lit(_RNN_Q[0])) * (F.col("py") - F.lit(_RNN_Q[0]))
-        ).alias("dq"),
-    )
-    out = qd.join(nn, "pid").filter(F.col("dq") < F.col("d1"))
-    return out.select(
-        F.col("pid").alias("doc_id"),
-        F.round("dq", 6).alias("dist_q"),
-        F.round("d1", 6).alias("dist_nn"),
-        F.col("nn_id"),
-    ).orderBy("dist_q", "doc_id")
-
-
-def _rnn_influence_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    return f"""
-        WITH pts AS (SELECT doc_id AS pid, {lng} AS px, {lat} AS py
-                     FROM documents WHERE doc_id < {_RNN_COHORT}),
-        nn AS (SELECT a.pid,
-                      MIN(struct_pack(
-                          d := SQRT((a.px - b.px) * (a.px - b.px)
-                                  + (a.py - b.py) * (a.py - b.py)),
-                          did := b.pid)) AS b
-               FROM pts a JOIN pts b ON a.pid <> b.pid
-               GROUP BY 1),
-        qd AS (SELECT pid, px, py,
-                      SQRT((px - {_RNN_Q[1]!r}) * (px - {_RNN_Q[1]!r})
-                         + (py - {_RNN_Q[0]!r}) * (py - {_RNN_Q[0]!r})) AS dq
-               FROM pts)
-        SELECT qd.pid AS doc_id, ROUND(qd.dq, 6) AS dist_q,
-               ROUND(nn.b.d, 6) AS dist_nn, nn.b.did AS nn_id
-        FROM qd JOIN nn ON qd.pid = nn.pid
-        WHERE qd.dq < nn.b.d
-        ORDER BY dist_q, doc_id
-    """
-
-
-# ---------------------------------------------------------------------------
-# gradient-boosted stumps (session 12)
-# ---------------------------------------------------------------------------
-
-
-def q_boosted_stumps(spark, sf_dir):
-    """Two rounds of L2 gradient boosting with decision-stump base
-    learners on (n_chars → lang = 'en') — the distributed-GBDT kernel one
-    level up from `decision_stump`. Everything runs on the AGGREGATED
-    per-feature-value table (v, m, pos): round 1 maximizes the variance
-    gain pl²/nl + pr²/nr from exact-integer prefix sums; round-2 residual
-    sums per value are closed forms of (m, pos, leaf prediction), so the
-    residual fit never touches row-level floats. Leaf values and gains are
-    pre-rounded 9 dp (the kmeans/plsa unroll discipline); prefix sums run
-    in value order in BOTH engines, so float accumulation order is
-    identical. Output: one row per round (threshold, left/right value)."""
-    from pyspark.sql import Window
-
-    d = _read(spark, sf_dir, "documents").select(
-        "n_chars", (F.col("lang") == "en").cast("long").alias("y")
-    )
-    per_v = d.groupBy("n_chars").agg(
-        F.count(F.lit(1)).alias("m"), F.sum("y").alias("pos")
-    )
-    w = Window.orderBy("n_chars").rowsBetween(Window.unboundedPreceding, 0)
-    tot = per_v.agg(F.sum("m").alias("n"), F.sum("pos").alias("p"))
-    pre = (
-        per_v.select(
-            "n_chars",
-            F.sum("m").over(w).alias("nl"),
-            F.sum("pos").over(w).alias("pl"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("nl") < F.col("n"))
-    )
-    nl = F.col("nl").cast("double")
-    nr = (F.col("n") - F.col("nl")).cast("double")
-    pl = F.col("pl").cast("double")
-    pr = (F.col("p") - F.col("pl")).cast("double")
-    gain1 = F.round(pl * pl / nl + pr * pr / nr, 9)
-    b1 = pre.agg(
-        F.max(F.struct(gain1.alias("g"), (-F.col("n_chars")).alias("nv"))).alias("b")
-    ).select((-F.col("b.nv")).alias("t1"))
-    r1 = (
-        pre.crossJoin(F.broadcast(b1))
-        .filter(F.col("n_chars") == F.col("t1"))
-        .select(
-            "t1",
-            F.round(pl / nl, 9).alias("lv1"),
-            F.round(pr / nr, 9).alias("rv1"),
-        )
-    )
-    # round 2: residual aggregates per value from (m, pos, leaf prediction)
-    res = per_v.crossJoin(F.broadcast(r1)).select(
-        "n_chars",
-        "m",
-        (
-            F.col("pos").cast("double")
-            - F.col("m").cast("double")
-            * F.when(F.col("n_chars") <= F.col("t1"), F.col("lv1")).otherwise(
-                F.col("rv1")
-            )
-        ).alias("s"),
-        "t1",
-        "lv1",
-        "rv1",
-    )
-    tot2 = res.groupBy("t1", "lv1", "rv1").agg(
-        F.sum("m").alias("n"), F.round(F.sum("s"), 9).alias("stot")
-    )
-    pre2 = (
-        res.select(
-            "n_chars",
-            F.sum("m").over(w).alias("nl"),
-            F.round(F.sum("s").over(w), 9).alias("sl"),
-        )
-        .crossJoin(F.broadcast(tot2))
-        .filter(F.col("nl") < F.col("n"))
-    )
-    sl = F.col("sl")
-    sr = F.col("stot") - F.col("sl")
-    nl2 = F.col("nl").cast("double")
-    nr2 = (F.col("n") - F.col("nl")).cast("double")
-    gain2 = F.round(sl * sl / nl2 + sr * sr / nr2, 9)
-    b2 = pre2.agg(
-        F.max(
-            F.struct(
-                gain2.alias("g"),
-                (-F.col("n_chars")).alias("nv"),
-                F.round(sl / nl2, 9).alias("lv"),
-                F.round(sr / nr2, 9).alias("rv"),
-            )
-        ).alias("b"),
-        F.first("t1").alias("t1"),
-        F.first("lv1").alias("lv1"),
-        F.first("rv1").alias("rv1"),
-    )
-    out = b2.select(
-        F.lit(1).alias("round"),
-        F.col("t1").alias("threshold"),
-        F.col("lv1").alias("left_value"),
-        F.col("rv1").alias("right_value"),
-    ).unionByName(
-        b2.select(
-            F.lit(2).alias("round"),
-            (-F.col("b.nv")).alias("threshold"),
-            F.col("b.lv").alias("left_value"),
-            F.col("b.rv").alias("right_value"),
-        )
-    )
-    return out.orderBy("round")
-
-
-def _boosted_stumps_sql() -> str:
-    return """
-        WITH d AS (SELECT n_chars, CAST(lang = 'en' AS BIGINT) AS y
-                   FROM documents),
-        per_v AS (SELECT n_chars, COUNT(*) AS m, SUM(y) AS pos
-                  FROM d GROUP BY 1),
-        tot AS (SELECT SUM(m) AS n, SUM(pos) AS p FROM per_v),
-        pre AS (SELECT n_chars,
-                       SUM(m) OVER (ORDER BY n_chars) AS nl,
-                       SUM(pos) OVER (ORDER BY n_chars) AS pl,
-                       tot.n, tot.p
-                FROM per_v CROSS JOIN tot),
-        s1 AS (SELECT n_chars, nl, pl, n, p,
-                      ROUND(CAST(pl AS DOUBLE) * pl / nl
-                            + CAST(p - pl AS DOUBLE) * (p - pl) / (n - nl), 9)
-                          AS gain
-               FROM pre WHERE nl < n),
-        b1 AS (SELECT MAX(struct_pack(g := gain, nv := -n_chars)) AS b
-               FROM s1),
-        r1 AS (SELECT s1.n_chars AS t1,
-                      ROUND(CAST(s1.pl AS DOUBLE) / s1.nl, 9) AS lv1,
-                      ROUND(CAST(s1.p - s1.pl AS DOUBLE) / (s1.n - s1.nl), 9)
-                          AS rv1
-               FROM s1 CROSS JOIN b1 WHERE s1.n_chars = -b1.b.nv),
-        res AS (SELECT per_v.n_chars, per_v.m,
-                       CAST(per_v.pos AS DOUBLE)
-                       - CAST(per_v.m AS DOUBLE)
-                         * (CASE WHEN per_v.n_chars <= r1.t1
-                                 THEN r1.lv1 ELSE r1.rv1 END) AS s,
-                       r1.t1, r1.lv1, r1.rv1
-                FROM per_v CROSS JOIN r1),
-        tot2 AS (SELECT t1, lv1, rv1, SUM(m) AS n,
-                        ROUND(SUM(s), 9) AS stot
-                 FROM res GROUP BY 1, 2, 3),
-        pre2 AS (SELECT res.n_chars,
-                        SUM(res.m) OVER (ORDER BY res.n_chars) AS nl,
-                        ROUND(SUM(res.s) OVER (ORDER BY res.n_chars), 9) AS sl,
-                        tot2.n, tot2.stot, tot2.t1, tot2.lv1, tot2.rv1
-                 FROM res CROSS JOIN tot2),
-        s2 AS (SELECT *,
-                      ROUND(sl * sl / nl
-                            + (stot - sl) * (stot - sl) / (n - nl), 9) AS gain
-               FROM pre2 WHERE nl < n),
-        b2 AS (SELECT MAX(struct_pack(
-                          g := gain, nv := -n_chars,
-                          lv := ROUND(sl / nl, 9),
-                          rv := ROUND((stot - sl) / (n - nl), 9))) AS b,
-                      FIRST(t1) AS t1, FIRST(lv1) AS lv1, FIRST(rv1) AS rv1
-               FROM s2)
-        SELECT 1 AS round, CAST(t1 AS BIGINT) AS threshold,
-               lv1 AS left_value, rv1 AS right_value FROM b2
-        UNION ALL
-        SELECT 2 AS round, CAST(-b.nv AS BIGINT) AS threshold,
-               b.lv AS left_value, b.rv AS right_value FROM b2
-        ORDER BY round
-    """
-
-
-# ---------------------------------------------------------------------------
-# 1-D Gaussian-mixture EM on log(value) (session 12)
-# ---------------------------------------------------------------------------
-
-_GMM_K = 3
-_GMM_ROUNDS = 3
-_GMM_VFLOOR = 0.01  # variance floor: keeps densities finite, stops collapse
-
-
-def q_gmm_em_values(spark, sf_dir):
-    """1-D Gaussian-mixture EM (K=3, 3 rounds) on ln(event value) — the
-    soft-clustering analog of `kmeans_geo` and the direct stand-in for the
-    reference's GMM cluster step (utils/cluster.py:45-53): lognormal value
-    mixtures are the classic event-magnitude decomposition. Same iterative
-    discipline as kmeans/plsa: parameters are O(K) driver state, each EM
-    round is ONE full-scan codegen agg (densities over literal params, no
-    join, no shuffle of the points), params re-rounded 6 dp per round so
-    the unrolled DuckDB CTE chain converges on identical doubles.
-
-    Float parity: per-row responsibilities are the identical expression in
-    both engines (exp/sqrt over the same 6-dp literals); sums are left
-    UNROUNDED and only the ratios (mu = Sxr·x/Sr etc.) are rounded — ratio
-    relative error from summation order is ~sqrt(n)·eps ≈ 1e-14, far below
-    the 5e-7 boundary of the 6-dp rounding (the od_ipf knife-edge lesson:
-    never 9-dp-round a large-magnitude intermediate sum). Rows whose total
-    density underflows to exact 0.0 (deterministic in IEEE, identical both
-    engines) are excluded from the M-step."""
-    xdf = (
-        _read(spark, sf_dir, "events")
-        .filter(F.col("value") > 0)
-        .select(F.log(F.col("value")).alias("x"))
-        .localCheckpoint(eager=True)  # reused K_ROUNDS+1 times
-    )
-    st = xdf.agg(
-        F.min("x").alias("mn"),
-        F.max("x").alias("mx"),
-        F.avg("x").alias("ax"),
-        F.avg(F.col("x") * F.col("x")).alias("axx"),
-    )
-    init = st.select(
-        F.round(
-            F.greatest(
-                F.col("axx") - F.col("ax") * F.col("ax"), F.lit(_GMM_VFLOOR)
-            ),
-            6,
-        ).alias("vini"),
-        *[
-            F.round(
-                F.col("mn")
-                + F.lit((k + 0.5) / _GMM_K) * (F.col("mx") - F.col("mn")),
-                6,
-            ).alias(f"mu{k}")
-            for k in range(_GMM_K)
-        ],
-    ).collect()[0]
-    params = [(1.0 / 3.0, init[f"mu{k}"], init["vini"]) for k in range(_GMM_K)]
-
-    for _ in range(_GMM_ROUNDS):
-        dens = [
-            F.lit(w)
-            * F.exp(
-                -(F.col("x") - F.lit(mu))
-                * (F.col("x") - F.lit(mu))
-                / (F.lit(2.0) * F.lit(v))
-            )
-            / F.sqrt(F.lit(v))
-            for (w, mu, v) in params
-        ]
-        es = dens[0] + dens[1] + dens[2]
-        rows = xdf.select(
-            "x", es.alias("es"), *[dens[k].alias(f"e{k}") for k in range(_GMM_K)]
-        ).filter(F.col("es") > 0)
-        aggs = [F.count(F.lit(1)).alias("cnt")]
-        for k in range(_GMM_K):
-            r = F.col(f"e{k}") / F.col("es")
-            aggs += [
-                F.sum(r).alias(f"s{k}"),
-                F.sum(r * F.col("x")).alias(f"sx{k}"),
-                F.sum(r * F.col("x") * F.col("x")).alias(f"sxx{k}"),
-            ]
-        a = rows.agg(*aggs)
-        b = a.select(
-            "*",
-            *[
-                F.round(F.col(f"sx{k}") / F.col(f"s{k}"), 6).alias(f"nmu{k}")
-                for k in range(_GMM_K)
-            ],
-        )
-        c = b.select(
-            *[
-                F.round(
-                    F.col(f"s{k}") / F.col("cnt").cast("double"), 6
-                ).alias(f"nw{k}")
-                for k in range(_GMM_K)
-            ],
-            *[F.col(f"nmu{k}") for k in range(_GMM_K)],
-            *[
-                F.round(
-                    F.greatest(
-                        F.col(f"sxx{k}") / F.col(f"s{k}")
-                        - F.col(f"nmu{k}") * F.col(f"nmu{k}"),
-                        F.lit(_GMM_VFLOOR),
-                    ),
-                    6,
-                ).alias(f"nv{k}")
-                for k in range(_GMM_K)
-            ],
-        ).collect()[0]
-        params = [
-            (c[f"nw{k}"], c[f"nmu{k}"], c[f"nv{k}"]) for k in range(_GMM_K)
-        ]
-
-    return (
-        spark.createDataFrame(
-            [(k, params[k][0], params[k][1], params[k][2]) for k in range(_GMM_K)],
-            "comp int, weight double, mu double, sigma2 double",
-        )
-        .orderBy("comp")
-    )
-
-
-def _gmm_em_values_sql() -> str:
-    k_range = range(_GMM_K)
-    fr = [repr((k + 0.5) / _GMM_K) for k in k_range]
-    p0 = ", ".join(
-        f"(1.0/3.0) AS w{k}, ROUND(mn + {fr[k]} * (mx - mn), 6) AS mu{k}, "
-        f"vini AS v{k}"
-        for k in k_range
-    )
-    steps = []
-    prev = "p0"
-    for t in range(1, _GMM_ROUNDS + 1):
-        dens = ", ".join(
-            f"p.w{k} * EXP(-(x.x - p.mu{k}) * (x.x - p.mu{k}) "
-            f"/ (2.0 * p.v{k})) / SQRT(p.v{k}) AS e{k}"
-            for k in k_range
-        )
-        sums = ", ".join(
-            f"SUM(e{k} / es) AS s{k}, SUM(e{k} / es * x) AS sx{k}, "
-            f"SUM(e{k} / es * x * x) AS sxx{k}"
-            for k in k_range
-        )
-        mus = ", ".join(f"ROUND(sx{k} / s{k}, 6) AS nmu{k}" for k in k_range)
-        news = ", ".join(
-            f"ROUND(s{k} / CAST(cnt AS DOUBLE), 6) AS w{k}, nmu{k} AS mu{k}, "
-            f"ROUND(GREATEST(sxx{k} / s{k} - nmu{k} * nmu{k}, {_GMM_VFLOOR}), 6)"
-            f" AS v{k}"
-            for k in k_range
-        )
-        steps.append(
-            f"""d{t} AS (SELECT x.x, {dens} FROM x CROSS JOIN {prev} p),
-        f{t} AS (SELECT x, e0, e1, e2, e0 + e1 + e2 AS es FROM d{t}
-                 WHERE e0 + e1 + e2 > 0),
-        s{t} AS (SELECT COUNT(*) AS cnt, {sums} FROM f{t}),
-        m{t} AS (SELECT *, {mus} FROM s{t}),
-        p{t} AS (SELECT {news} FROM m{t})"""
-        )
-        prev = f"p{t}"
-    chain = ",\n        ".join(steps)
-    arms = " UNION ALL ".join(
-        f"SELECT {k} AS comp, w{k} AS weight, mu{k} AS mu, v{k} AS sigma2 "
-        f"FROM {prev}"
-        for k in k_range
-    )
-    return f"""
-        WITH x AS (SELECT LN(value) AS x FROM events WHERE value > 0),
-        st AS (SELECT MIN(x) AS mn, MAX(x) AS mx,
-                      ROUND(GREATEST(AVG(x * x) - AVG(x) * AVG(x),
-                                     {_GMM_VFLOOR}), 6) AS vini
-               FROM x),
-        p0 AS (SELECT {p0} FROM st),
-        {chain}
-        SELECT comp, weight, mu, sigma2 FROM ({arms}) ORDER BY comp
-    """
-
-
-# ---------------------------------------------------------------------------
-# group meeting point — Weiszfeld geometric median (session 12)
-# ---------------------------------------------------------------------------
-
-_MEET_ROUNDS = 3
-_MEET_EPS = 1e-6  # smoothed distance sqrt(d2 + eps): bounds 1/d, kills the
-# Weiszfeld singularity when the estimate lands on a data point
-
-
-def q_meeting_point(spark, sf_dir):
-    """Geometric median ("meeting point") per event_type via 3 smoothed
-    Weiszfeld rounds — the L1-optimal facility location the plain centroid
-    (`spherical_centroid`) over-smooths: the median is outlier-robust, the
-    workhorse behind dispatch-point and depot placement. Init = centroid;
-    each round reweights points by 1/sqrt(d²+ε) toward the current
-    estimate and takes the weighted mean, re-rounded 6 dp (the kmeans/ipf
-    unroll discipline). Output adds the mean distance to the final point.
-
-    Scale shape: per-group estimates are O(groups) rows; each round is one
-    broadcast join of the checkpointed point table against that tiny
-    estimate table + a partial+final agg — never a point×point dataflow,
-    and rounds are fixed (3), not convergence-polled. Float parity: per-row
-    weights are identical doubles in both engines (sqrt and division are
-    correctly rounded IEEE ops over identical inputs); only the final
-    ratios get the 6-dp rounding, keeping knife-edges ~1e-13 away."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        "event_type", lat.alias("y"), lng.alias("x")
-    ).localCheckpoint(eager=True)
-    m = pts.groupBy("event_type").agg(
-        F.round(F.avg("y"), 6).alias("my"), F.round(F.avg("x"), 6).alias("mx")
-    )
-    for _ in range(_MEET_ROUNDS):
-        j = pts.join(F.broadcast(m), "event_type")
-        w = F.lit(1.0) / F.sqrt(
-            (F.col("y") - F.col("my")) * (F.col("y") - F.col("my"))
-            + (F.col("x") - F.col("mx")) * (F.col("x") - F.col("mx"))
-            + F.lit(_MEET_EPS)
-        )
-        m = (
-            j.select(
-                "event_type",
-                w.alias("w"),
-                (w * F.col("y")).alias("wy"),
-                (w * F.col("x")).alias("wx"),
-            )
-            .groupBy("event_type")
-            .agg(
-                F.round(F.sum("wy") / F.sum("w"), 6).alias("my"),
-                F.round(F.sum("wx") / F.sum("w"), 6).alias("mx"),
-            )
-        )
-    j = pts.join(F.broadcast(m), "event_type")
-    d = F.sqrt(
-        (F.col("y") - F.col("my")) * (F.col("y") - F.col("my"))
-        + (F.col("x") - F.col("mx")) * (F.col("x") - F.col("mx"))
-    )
-    return (
-        j.groupBy("event_type", "my", "mx")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.round(F.avg(d), 6).alias("avg_dist"),
-        )
-        .select(
-            "event_type",
-            "n_points",
-            F.col("my").alias("m_lat"),
-            F.col("mx").alias("m_lng"),
-            "avg_dist",
-        )
-        .orderBy("event_type")
-    )
-
-
-def _meeting_point_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    steps = []
-    prev = "m0"
-    for t in range(1, _MEET_ROUNDS + 1):
-        wexpr = (
-            f"(1.0 / SQRT((p.y - m.my) * (p.y - m.my) "
-            f"+ (p.x - m.mx) * (p.x - m.mx) + {_MEET_EPS!r}))"
-        )
-        steps.append(
-            f"""m{t} AS (
-            SELECT p.event_type,
-                   ROUND(SUM({wexpr} * p.y) / SUM({wexpr}), 6) AS my,
-                   ROUND(SUM({wexpr} * p.x) / SUM({wexpr}), 6) AS mx
-            FROM p JOIN {prev} m ON p.event_type = m.event_type
-            GROUP BY 1)"""
-        )
-        prev = f"m{t}"
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH p AS (SELECT event_type, {lat} AS y, {lng} AS x FROM events),
-        m0 AS (SELECT event_type, ROUND(AVG(y), 6) AS my,
-                      ROUND(AVG(x), 6) AS mx
-               FROM p GROUP BY 1),
-        {chain}
-        SELECT p.event_type, COUNT(*) AS n_points, m.my AS m_lat,
-               m.mx AS m_lng,
-               ROUND(AVG(SQRT((p.y - m.my) * (p.y - m.my)
-                              + (p.x - m.mx) * (p.x - m.mx))), 6) AS avg_dist
-        FROM p JOIN {prev} m ON p.event_type = m.event_type
-        GROUP BY 1, m.my, m.mx
-        ORDER BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# OD segment rasterization — exact integer Bresenham/DDA (session 12)
-# ---------------------------------------------------------------------------
-
-_BRES_RES = 6
-
-
-def q_od_segment_raster(spark, sf_dir):
-    """Exact vector→raster burn of OD segments onto the res-6 grid: every
-    consecutive event pair per user is a segment between two cell coords,
-    rasterized by integer DDA — steps = max(|dx|,|dy|) samples, the minor
-    coordinate rounded by the EXACT integer formula
-    x0 + floor((2·i·dx + steps) / (2·steps)) — so the crossed-cell set is
-    pure int64 arithmetic, bit-identical in any engine (the media_run_
-    lengths / contour_cases raster family, but for line geometry; this is
-    the exact sibling of `traj_cells`' 9-point sampled approximation).
-    Top-30 hottest raster cells with segment and user counts.
-
-    Scale shape: window lag + a ≤64× bounded explode (res-6 grid is 64
-    wide, so steps ≤ 63 by construction) + ONE partial+final agg; a 100 TB
-    event table never pairs rows beyond the per-user lag. FLOOR-division
-    safety: numerators are exact small integers in double, and non-integer
-    quotients sit ≥ 1/(2·steps) ≥ 1/126 from an integer — no boundary
-    risk."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    n = 2**_BRES_RES
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    gx = (
-        F.greatest(
-            F.lit(0),
-            F.least(F.lit(n - 1), F.floor((lng + F.lit(180.0)) / F.lit(360.0) * F.lit(n))),
-        )
-    ).cast("long")
-    gy = (
-        F.greatest(
-            F.lit(0),
-            F.least(F.lit(n - 1), F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n))),
-        )
-    ).cast("long")
-    pts = ev.select("user_id", "ts", "event_id", gx.alias("gx"), gy.alias("gy"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = (
-        pts.select(
-            "user_id",
-            F.lag("gx").over(w).alias("x0"),
-            F.lag("gy").over(w).alias("y0"),
-            F.col("gx").alias("x1"),
-            F.col("gy").alias("y1"),
-        )
-        .filter(F.col("x0").isNotNull())
-        .select(
-            "user_id",
-            "x0",
-            "y0",
-            (F.col("x1") - F.col("x0")).alias("dx"),
-            (F.col("y1") - F.col("y0")).alias("dy"),
-            F.greatest(
-                F.abs(F.col("x1") - F.col("x0")), F.abs(F.col("y1") - F.col("y0"))
-            ).alias("steps"),
-        )
-    )
-    e = seg.withColumn("i", F.explode(F.sequence(F.lit(0), F.col("steps"))))
-
-    def _interp(p0: str, d: str):
-        return F.when(F.col("steps") == 0, F.col(p0)).otherwise(
-            F.col(p0)
-            + F.floor(
-                (
-                    F.lit(2) * F.col("i") * F.col(d) + F.col("steps")
-                ).cast("double")
-                / (F.lit(2) * F.col("steps"))
-            ).cast("long")
-        )
-
-    cell = (
-        F.lit(_BRES_RES * RES_MULTIPLIER)
-        + _interp("y0", "dy") * F.lit(n)
-        + _interp("x0", "dx")
-    ).cast("long")
-    return (
-        e.select("user_id", cell.alias("cell"))
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_segments"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .orderBy(F.desc("n_segments"), F.asc("cell"))
-        .limit(30)
-    )
-
-
-def _od_segment_raster_sql() -> str:
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    n = 2**_BRES_RES
-    lat, lng = _latlng_sql("event_id")
-    gx = (
-        f"GREATEST(0, LEAST({n - 1}, "
-        f"CAST(FLOOR(({lng} + 180.0) / 360.0 * {n}) AS BIGINT)))"
-    )
-    gy = (
-        f"GREATEST(0, LEAST({n - 1}, "
-        f"CAST(FLOOR(({lat} + 90.0) / 180.0 * {n}) AS BIGINT)))"
-    )
-    interp_x = (
-        "CASE WHEN steps = 0 THEN x0 ELSE x0 + CAST(FLOOR("
-        "CAST(2 * i * dx + steps AS DOUBLE) / (2 * steps)) AS BIGINT) END"
-    )
-    interp_y = (
-        "CASE WHEN steps = 0 THEN y0 ELSE y0 + CAST(FLOOR("
-        "CAST(2 * i * dy + steps AS DOUBLE) / (2 * steps)) AS BIGINT) END"
-    )
-    return f"""
-        WITH p AS (SELECT user_id, ts, event_id, {gx} AS gx, {gy} AS gy
-                   FROM events),
-        seg AS (SELECT user_id,
-                       LAG(gx) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS x0,
-                       LAG(gy) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS y0,
-                       gx AS x1, gy AS y1
-                FROM p),
-        s2 AS (SELECT user_id, x0, y0, x1 - x0 AS dx, y1 - y0 AS dy,
-                      GREATEST(ABS(x1 - x0), ABS(y1 - y0)) AS steps
-               FROM seg WHERE x0 IS NOT NULL),
-        e AS (SELECT user_id, x0, y0, dx, dy, steps,
-                     UNNEST(generate_series(0, steps)) AS i
-              FROM s2),
-        c AS (SELECT user_id,
-                     CAST({_BRES_RES * RES_MULTIPLIER} AS BIGINT)
-                     + ({interp_y}) * {n} + ({interp_x}) AS cell
-              FROM e)
-        SELECT cell, COUNT(*) AS n_segments,
-               COUNT(DISTINCT user_id) AS n_users
-        FROM c GROUP BY 1
-        ORDER BY n_segments DESC, cell ASC
-        LIMIT 30
-    """
-
-
-# ---------------------------------------------------------------------------
-# viewshed over the event-density raster (session 12)
-# ---------------------------------------------------------------------------
-
-_VIEW_RES = 6
-_VIEW_R = 20  # Chebyshev radius: 41×41 target window, all inside the grid
-_VIEW_OX, _VIEW_OY = 32, 32  # observer at the res-6 grid center
-_VIEW_H = 1  # observer mast height above its cell's elevation
-
-
-def q_viewshed_cells(spark, sf_dir):
-    """Raster viewshed (line-of-sight) over the event-count elevation
-    model: each res-6 cell's 'elevation' is its event count (the density
-    raster as synthetic terrain — signal-obstruction-by-buildings), and a
-    target cell at offset (dx,dy) from the center observer is visible iff
-    no intermediate cell on the integer-DDA ray subtends a larger
-    elevation angle. The angle test is the EXACT cross-multiplied integer
-    comparison (ej−eo−H)·steps ≥ (et−eo−H)·j — zero float anywhere, so
-    parity is bit-trivial. Output: per Chebyshev ring 1..20, cells tested
-    and cells visible.
-
-    Scale shape: ONE partial+final agg builds the raster; the ray walk is
-    a fixed 41×41×≤19 exploded lattice (O(1) in table size) equi-joined
-    against the raster (broadcast at any SF — a res-6 raster is ≤4096
-    rows). The DDA minor-axis formula is shared with od_segment_raster."""
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    n = 2**_VIEW_RES
-    gx = (
-        F.greatest(
-            F.lit(0),
-            F.least(F.lit(n - 1), F.floor((lng + F.lit(180.0)) / F.lit(360.0) * F.lit(n))),
-        )
-    ).cast("long")
-    gy = (
-        F.greatest(
-            F.lit(0),
-            F.least(F.lit(n - 1), F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n))),
-        )
-    ).cast("long")
-    raster = (
-        ev.select(gx.alias("gx"), gy.alias("gy"))
-        .groupBy("gx", "gy")
-        .agg(F.count(F.lit(1)).alias("elev"))
-    )
-    eo_df = raster.agg(
-        F.coalesce(
-            F.sum(
-                F.when(
-                    (F.col("gx") == _VIEW_OX) & (F.col("gy") == _VIEW_OY),
-                    F.col("elev"),
-                )
-            ),
-            F.lit(0),
-        ).alias("eo")
-    )
-    rng = F.explode(F.sequence(F.lit(-_VIEW_R), F.lit(_VIEW_R)))
-    targets = (
-        spark.range(1)
-        .select(rng.alias("dx"))
-        .select("dx", rng.alias("dy"))
-        .filter(~((F.col("dx") == 0) & (F.col("dy") == 0)))
-        .select(
-            "dx",
-            "dy",
-            F.greatest(F.abs("dx"), F.abs("dy")).alias("steps"),
-            (F.lit(_VIEW_OX) + F.col("dx")).alias("tx"),
-            (F.lit(_VIEW_OY) + F.col("dy")).alias("ty"),
-        )
-    )
-    t2 = (
-        targets.join(
-            F.broadcast(raster),
-            (F.col("tx") == F.col("gx")) & (F.col("ty") == F.col("gy")),
-            "left",
-        )
-        .select("dx", "dy", "steps", F.coalesce("elev", F.lit(0)).alias("et"))
-        .crossJoin(F.broadcast(eo_df))
-    )
-    far = t2.filter(F.col("steps") >= 2).withColumn(
-        "j", F.explode(F.sequence(F.lit(1), F.col("steps") - 1))
-    )
-
-    def _ray(d: str):
-        return F.floor(
-            (F.lit(2) * F.col("j") * F.col(d) + F.col("steps")).cast("double")
-            / (F.lit(2) * F.col("steps"))
-        ).cast("long")
-
-    jc = far.select(
-        "dx",
-        "dy",
-        "steps",
-        "et",
-        "eo",
-        "j",
-        (F.lit(_VIEW_OX) + _ray("dx")).alias("xj"),
-        (F.lit(_VIEW_OY) + _ray("dy")).alias("yj"),
-    )
-    jb = jc.join(
-        F.broadcast(raster),
-        (F.col("xj") == F.col("gx")) & (F.col("yj") == F.col("gy")),
-        "left",
-    ).select(
-        "dx",
-        "dy",
-        (
-            (F.coalesce("elev", F.lit(0)) - F.col("eo") - F.lit(_VIEW_H))
-            * F.col("steps")
-            >= (F.col("et") - F.col("eo") - F.lit(_VIEW_H)) * F.col("j")
-        )
-        .cast("long")
-        .alias("b"),
-    )
-    nb = jb.groupBy("dx", "dy").agg(F.sum("b").alias("nb"))
-    vis = t2.join(nb, ["dx", "dy"], "left").select(
-        F.col("steps").alias("ring"),
-        (F.coalesce("nb", F.lit(0)) == 0).cast("long").alias("visible"),
-    )
-    return (
-        vis.groupBy("ring")
-        .agg(F.count(F.lit(1)).alias("n_cells"), F.sum("visible").alias("n_visible"))
-        .orderBy("ring")
-    )
-
-
-def _viewshed_cells_sql() -> str:
-    n = 2**_VIEW_RES
-    lat, lng = _latlng_sql("event_id")
-    gx = (
-        f"GREATEST(0, LEAST({n - 1}, "
-        f"CAST(FLOOR(({lng} + 180.0) / 360.0 * {n}) AS BIGINT)))"
-    )
-    gy = (
-        f"GREATEST(0, LEAST({n - 1}, "
-        f"CAST(FLOOR(({lat} + 90.0) / 180.0 * {n}) AS BIGINT)))"
-    )
-    return f"""
-        WITH r AS (SELECT gx, gy, COUNT(*) AS elev FROM
-                       (SELECT {gx} AS gx, {gy} AS gy FROM events)
-                   GROUP BY 1, 2),
-        eo AS (SELECT CAST(COALESCE(SUM(CASE WHEN gx = {_VIEW_OX}
-                                              AND gy = {_VIEW_OY}
-                                         THEN elev END), 0) AS BIGINT) AS eo
-               FROM r),
-        t AS (SELECT dx, dy, GREATEST(ABS(dx), ABS(dy)) AS steps,
-                     {_VIEW_OX} + dx AS tx, {_VIEW_OY} + dy AS ty
-              FROM (SELECT UNNEST(generate_series(-{_VIEW_R}, {_VIEW_R})) AS dx) a
-              CROSS JOIN
-                   (SELECT UNNEST(generate_series(-{_VIEW_R}, {_VIEW_R})) AS dy) b
-              WHERE NOT (dx = 0 AND dy = 0)),
-        t2 AS (SELECT t.dx, t.dy, t.steps, COALESCE(r.elev, 0) AS et, eo.eo
-               FROM t LEFT JOIN r ON t.tx = r.gx AND t.ty = r.gy
-               CROSS JOIN eo),
-        far AS (SELECT dx, dy, steps, et, eo,
-                       UNNEST(generate_series(1, steps - 1)) AS j
-                FROM t2 WHERE steps >= 2),
-        jc AS (SELECT dx, dy, steps, et, eo, j,
-                      {_VIEW_OX} + CAST(FLOOR(CAST(2 * j * dx + steps AS DOUBLE)
-                                              / (2 * steps)) AS BIGINT) AS xj,
-                      {_VIEW_OY} + CAST(FLOOR(CAST(2 * j * dy + steps AS DOUBLE)
-                                              / (2 * steps)) AS BIGINT) AS yj
-               FROM far),
-        jb AS (SELECT jc.dx, jc.dy,
-                      CASE WHEN (COALESCE(r.elev, 0) - jc.eo - {_VIEW_H})
-                                * jc.steps
-                                >= (jc.et - jc.eo - {_VIEW_H}) * jc.j
-                           THEN 1 ELSE 0 END AS b
-               FROM jc LEFT JOIN r ON jc.xj = r.gx AND jc.yj = r.gy),
-        nb AS (SELECT dx, dy, CAST(SUM(b) AS BIGINT) AS nb
-               FROM jb GROUP BY 1, 2)
-        SELECT t2.steps AS ring, COUNT(*) AS n_cells,
-               CAST(SUM(CASE WHEN COALESCE(nb.nb, 0) = 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_visible
-        FROM t2 LEFT JOIN nb ON t2.dx = nb.dx AND t2.dy = nb.dy
-        GROUP BY 1 ORDER BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# two-step floating catchment area accessibility (session 12)
-# ---------------------------------------------------------------------------
-
-_SFCA_RES = 5
-_SFCA_RING = 2  # Chebyshev catchment radius: 5×5 cells
-
-
-def q_sfca_accessibility(spark, sf_dir):
-    """Two-step floating catchment area (2SFCA) — the spatial-access
-    workhorse of health-geography: facilities (documents doc_id < 2000,
-    capacity 1 + doc_id % 5) first get a supply-to-demand ratio
-    R_j = capacity / Σ(event demand within their Chebyshev-2 res-5
-    catchment); each demand cell then sums the R_j of every facility
-    whose catchment covers it. Top-20 best-served demand cells.
-
-    Scale shape: demand and supply are each ONE partial+final agg; the
-    catchment is the standard 25-offset k-ring EXPLODE + equi-join (the
-    cell_kring_smooth plan — never a distance cross join); sites with
-    zero catchment demand drop (ratio undefined). Float protocol: R_j is
-    a 9-dp-rounded ratio of exact integers; accessibility sums tens of
-    those pre-rounded terms and rounds 6 dp."""
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_col
-
-    offs = [
-        (dx, dy)
-        for dy in range(-_SFCA_RING, _SFCA_RING + 1)
-        for dx in range(-_SFCA_RING, _SFCA_RING + 1)
-    ]
-    d = (
-        _read(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < 2000)
-    )
-    dlat, dlng = _latlng_cols(F.col("doc_id"))
-    sup = (
-        d.select(
-            cell_encode_col(dlat, dlng, _SFCA_RES).alias("scell"),
-            (F.lit(1) + F.pmod(F.col("doc_id"), F.lit(5))).alias("cap"),
-        )
-        .groupBy("scell")
-        .agg(F.sum("cap").alias("cap"))
-    )
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    elat, elng = _latlng_cols(F.col("event_id"))
-    dem = (
-        ev.select(cell_encode_col(elat, elng, _SFCA_RES).alias("dcell"))
-        .groupBy("dcell")
-        .agg(F.count(F.lit(1)).alias("n_dem"))
-    )
-    ring = F.array(
-        *[kring_neighbor_col("scell", _SFCA_RES, dx, dy) for dx, dy in offs]
-    )
-    sring = sup.select("scell", "cap", F.explode(ring).alias("nbr")).filter(
-        F.col("nbr").isNotNull()
-    )
-    rj = (
-        sring.join(dem, sring.nbr == dem.dcell)
-        .groupBy("scell", "cap")
-        .agg(F.sum("n_dem").alias("dsum"))
-        .select(
-            "scell",
-            F.round(
-                F.col("cap").cast("double") / F.col("dsum").cast("double"), 9
-            ).alias("rj"),
-        )
-    )
-    rring = rj.select("scell", "rj", F.explode(ring).alias("nbr")).filter(
-        F.col("nbr").isNotNull()
-    )
-    return (
-        rring.join(dem, rring.nbr == dem.dcell)
-        .groupBy("dcell", "n_dem")
-        .agg(F.round(F.sum("rj"), 6).alias("access"))
-        .select(F.col("dcell").alias("cell"), F.col("n_dem").alias("demand"), "access")
-        .orderBy(F.desc("access"), F.asc("cell"))
-        .limit(20)
-    )
-
-
-def _sfca_accessibility_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    dlat, dlng = _latlng_sql("doc_id")
-    elat, elng = _latlng_sql("event_id")
-    scell = cell_encode_sql(dlat, dlng, _SFCA_RES)
-    dcell = cell_encode_sql(elat, elng, _SFCA_RES)
-    offs = ", ".join(
-        f"({dx}, {dy})"
-        for dy in range(-_SFCA_RING, _SFCA_RING + 1)
-        for dx in range(-_SFCA_RING, _SFCA_RING + 1)
-    )
-    nbr = kring_neighbor_sql("s.scell", _SFCA_RES, "o.dx", "o.dy")
-    nbr2 = kring_neighbor_sql("r.scell", _SFCA_RES, "o.dx", "o.dy")
-    return f"""
-        WITH sup AS (SELECT scell, CAST(SUM(cap) AS BIGINT) AS cap FROM
-                         (SELECT {scell} AS scell, 1 + (doc_id % 5) AS cap
-                          FROM documents WHERE doc_id < 2000)
-                     GROUP BY 1),
-        dem AS (SELECT {dcell} AS dcell, COUNT(*) AS n_dem
-                FROM events GROUP BY 1),
-        sring AS (SELECT s.scell, s.cap, {nbr} AS nbr
-                  FROM sup s CROSS JOIN (VALUES {offs}) o(dx, dy)
-                  WHERE {nbr} IS NOT NULL),
-        rj AS (SELECT sr.scell,
-                      ROUND(CAST(MAX(sr.cap) AS DOUBLE)
-                            / CAST(SUM(d.n_dem) AS DOUBLE), 9) AS rj
-               FROM sring sr JOIN dem d ON sr.nbr = d.dcell
-               GROUP BY 1),
-        rring AS (SELECT r.scell, r.rj, {nbr2} AS nbr
-                  FROM rj r CROSS JOIN (VALUES {offs}) o(dx, dy)
-                  WHERE {nbr2} IS NOT NULL)
-        SELECT d.dcell AS cell, MAX(d.n_dem) AS demand,
-               ROUND(SUM(rr.rj), 6) AS access
-        FROM rring rr JOIN dem d ON rr.nbr = d.dcell
-        GROUP BY 1
-        ORDER BY access DESC, cell ASC
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# space-time prism rasterization (session 12)
-# ---------------------------------------------------------------------------
-
-_PRISM_RES = 4
-_PRISM_VMAX = 25.0  # planar speed budget, degrees/hour
-_PRISM_BMAX = 400.0  # cap: beyond this the ellipse covers the whole grid
-
-
-def q_spacetime_prism(spark, sf_dir):
-    """Hägerstrand space-time prism rasterization: for each consecutive
-    event pair per user, the reachable set under speed budget vmax is the
-    ellipse {c : d(p0,c) + d(c,p1) ≤ vmax·Δt}; its res-4 cell-center
-    raster is the potential-path area. Infeasible segments (straight-line
-    distance already exceeds the budget — the teleport_flags population)
-    drop out. Output: top-30 cells by prism coverage count.
-
-    Scale shape: window lag → segments, then a broadcast nested-loop join
-    against the FIXED 256-row res-4 cell-center inventory with the bbox
-    pre-filter |c−mid| ≤ B/2 (a provable superset of the ellipse: median
-    ≤ half focal-distance sum) before the two sqrt's — at 100 TB the bbox
-    becomes a cell-index range scan. Float parity: Δt→budget→distances
-    are one shared expression; the ≤ comparisons see bit-identical
-    doubles in both engines."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    n = 2**_PRISM_RES
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        lat.alias("y1"),
-        lng.alias("x1"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = pts.select(
-        "user_id",
-        F.lag("y1").over(w).alias("y0"),
-        F.lag("x1").over(w).alias("x0"),
-        (F.col("us") - F.lag("us").over(w)).alias("dt_us"),
-        "y1",
-        "x1",
-    ).filter(F.col("y0").isNotNull())
-    b = F.least(
-        F.lit(_PRISM_VMAX) * (F.col("dt_us").cast("double") / F.lit(3.6e9)),
-        F.lit(_PRISM_BMAX),
-    )
-    d01 = F.sqrt(
-        (F.col("y1") - F.col("y0")) * (F.col("y1") - F.col("y0"))
-        + (F.col("x1") - F.col("x0")) * (F.col("x1") - F.col("x0"))
-    )
-    feas = seg.withColumn("b", b).filter(d01 <= F.col("b"))
-    rngc = F.explode(F.sequence(F.lit(0), F.lit(n - 1)))
-    cells = (
-        spark.range(1)
-        .select(rngc.alias("gx"))
-        .select("gx", rngc.alias("gy"))
-        .select(
-            (F.lit(-90.0) + (F.col("gy") + F.lit(0.5)) * F.lit(180.0) / F.lit(n)).alias(
-                "clat"
-            ),
-            (
-                F.lit(-180.0) + (F.col("gx") + F.lit(0.5)) * F.lit(360.0) / F.lit(n)
-            ).alias("clng"),
-            (
-                F.lit(_PRISM_RES * RES_MULTIPLIER)
-                + F.col("gy") * F.lit(n)
-                + F.col("gx")
-            ).cast("long").alias("cell"),
-        )
-    )
-    cand = feas.crossJoin(F.broadcast(cells)).filter(
-        (
-            F.abs(F.col("clat") - (F.col("y0") + F.col("y1")) / F.lit(2.0))
-            <= F.col("b") / F.lit(2.0)
-        )
-        & (
-            F.abs(F.col("clng") - (F.col("x0") + F.col("x1")) / F.lit(2.0))
-            <= F.col("b") / F.lit(2.0)
-        )
-    )
-    d0 = F.sqrt(
-        (F.col("clat") - F.col("y0")) * (F.col("clat") - F.col("y0"))
-        + (F.col("clng") - F.col("x0")) * (F.col("clng") - F.col("x0"))
-    )
-    d1 = F.sqrt(
-        (F.col("clat") - F.col("y1")) * (F.col("clat") - F.col("y1"))
-        + (F.col("clng") - F.col("x1")) * (F.col("clng") - F.col("x1"))
-    )
-    return (
-        cand.filter(d0 + d1 <= F.col("b"))
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_prisms"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-        .orderBy(F.desc("n_prisms"), F.asc("cell"))
-        .limit(30)
-    )
-
-
-def _spacetime_prism_sql() -> str:
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    n = 2**_PRISM_RES
-    lat, lng = _latlng_sql("event_id")
-    return f"""
-        WITH p AS (SELECT user_id, ts, event_id, {lat} AS y1, {lng} AS x1,
-                          epoch_us(ts) AS us
-                   FROM events),
-        seg AS (SELECT user_id,
-                       LAG(y1) OVER w AS y0, LAG(x1) OVER w AS x0,
-                       us - LAG(us) OVER w AS dt_us, y1, x1
-                FROM p
-                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        feas AS (SELECT *,
-                        LEAST({_PRISM_VMAX!r} * (CAST(dt_us AS DOUBLE) / 3.6e9),
-                              {_PRISM_BMAX!r}) AS b
-                 FROM seg
-                 WHERE y0 IS NOT NULL
-                   AND SQRT((y1 - y0) * (y1 - y0) + (x1 - x0) * (x1 - x0))
-                       <= LEAST({_PRISM_VMAX!r} * (CAST(dt_us AS DOUBLE) / 3.6e9),
-                                {_PRISM_BMAX!r})),
-        cells AS (SELECT -90.0 + (gy + 0.5) * 180.0 / {n} AS clat,
-                         -180.0 + (gx + 0.5) * 360.0 / {n} AS clng,
-                         CAST({_PRISM_RES * RES_MULTIPLIER}
-                              + gy * {n} + gx AS BIGINT) AS cell
-                  FROM (SELECT UNNEST(generate_series(0, {n - 1})) AS gx) a
-                  CROSS JOIN
-                       (SELECT UNNEST(generate_series(0, {n - 1})) AS gy) b),
-        cand AS (SELECT f.user_id, f.b, c.cell,
-                        SQRT((c.clat - f.y0) * (c.clat - f.y0)
-                             + (c.clng - f.x0) * (c.clng - f.x0))
-                        + SQRT((c.clat - f.y1) * (c.clat - f.y1)
-                               + (c.clng - f.x1) * (c.clng - f.x1)) AS dsum
-                 FROM feas f CROSS JOIN cells c
-                 WHERE ABS(c.clat - (f.y0 + f.y1) / 2.0) <= f.b / 2.0
-                   AND ABS(c.clng - (f.x0 + f.x1) / 2.0) <= f.b / 2.0)
-        SELECT cell, COUNT(*) AS n_prisms,
-               COUNT(DISTINCT user_id) AS n_users
-        FROM cand WHERE dsum <= b
-        GROUP BY 1
-        ORDER BY n_prisms DESC, cell ASC
-        LIMIT 30
-    """
-
-
-# ---------------------------------------------------------------------------
-# grid-LOF local outlier factor (session 12)
-# ---------------------------------------------------------------------------
-
-_LOF_COHORT = 1500
-_LOF_RES = 3
-_LOF_K = 5
-
-
-def q_lof_outliers(spark, sf_dir):
-    """Local Outlier Factor (Breunig et al.) over document points, k=5,
-    with the standard grid-blocked candidate set: neighbors are drawn
-    from the res-3 3×3 k-ring (grid-LOF — the blocked formulation every
-    distributed LOF uses; a point's 5-NN beyond its ring is out of scope
-    by construction, documented). lrd = k / Σ reach-dist over the k-NN,
-    reach(a,b) = max(d(a,b), k-dist(b)); LOF = mean neighbor-lrd / own
-    lrd. Top-20 outliers.
-
-    Scale shape: candidate pairs come from ONE ring-offset explode +
-    equi-join on cell (~ring-occupancy × cohort, never cohort²); k-NN by
-    a (dist, id) window rank; two broadcast-sized re-joins fetch
-    neighbor k-dists and lrds. Float protocol: distances are identical
-    IEEE doubles both engines; lrd is a 9-dp-rounded ratio of a 5-term
-    sum; LOF rounds the ratio of pre-rounded lrds at 6 dp."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_col
-
-    d = (
-        _read(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < _LOF_COHORT)
-    )
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(
-        "doc_id",
-        lat.alias("y"),
-        lng.alias("x"),
-        cell_encode_col(lat, lng, _LOF_RES).alias("cell"),
-    ).localCheckpoint(eager=True)
-    offs = [(dx, dy) for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
-    ring = F.array(
-        *[kring_neighbor_col("cell", _LOF_RES, dx, dy) for dx, dy in offs]
-    )
-    a = pts.select(
-        F.col("doc_id").alias("a"),
-        F.col("y").alias("ay"),
-        F.col("x").alias("ax"),
-        F.explode(ring).alias("nbr"),
-    ).filter(F.col("nbr").isNotNull())
-    b = pts.select(
-        F.col("doc_id").alias("b"),
-        F.col("y").alias("by"),
-        F.col("x").alias("bx"),
-        F.col("cell").alias("bcell"),
-    )
-    pairs = (
-        a.join(b, a.nbr == b.bcell)
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            "a",
-            "b",
-            F.sqrt(
-                (F.col("ay") - F.col("by")) * (F.col("ay") - F.col("by"))
-                + (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx"))
-            ).alias("dist"),
-        )
-    )
-    w = Window.partitionBy("a").orderBy("dist", "b")
-    knn = pairs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= _LOF_K
-    )
-    full = (
-        knn.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("nk"), F.max("dist").alias("kdist"))
-        .filter(F.col("nk") == _LOF_K)
-    )
-    # reach(a,b) = max(d, kdist(b)); only points with a full k-NN keep lrd
-    reach = knn.join(
-        full.select(F.col("a").alias("b"), F.col("kdist").alias("kdist_b")),
-        "b",
-    ).select("a", "b", F.greatest("dist", "kdist_b").alias("reach"))
-    lrd = (
-        reach.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("nk"), F.sum("reach").alias("rsum"))
-        .filter(F.col("nk") == _LOF_K)
-        .select(
-            "a",
-            F.round(F.lit(float(_LOF_K)) / F.col("rsum"), 9).alias("lrd"),
-        )
-    )
-    lof = (
-        knn.join(lrd, "a")
-        .join(
-            lrd.select(F.col("a").alias("b"), F.col("lrd").alias("lrd_b")), "b"
-        )
-        .groupBy("a", "lrd")
-        .agg(F.count(F.lit(1)).alias("nn"), F.sum("lrd_b").alias("lsum"))
-        .filter(F.col("nn") == _LOF_K)
-        .select(
-            F.col("a").alias("doc_id"),
-            F.round(
-                F.col("lsum") / F.lit(float(_LOF_K)) / F.col("lrd"), 6
-            ).alias("lof"),
-        )
-    )
-    return lof.orderBy(F.desc("lof"), F.asc("doc_id")).limit(20)
-
-
-def _lof_outliers_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _LOF_RES)
-    offs = ", ".join(f"({dx}, {dy})" for dy in (-1, 0, 1) for dx in (-1, 0, 1))
-    nbr = kring_neighbor_sql("p.cell", _LOF_RES, "o.dx", "o.dy")
-    return f"""
-        WITH p AS (SELECT doc_id, {lat} AS y, {lng} AS x, {cell} AS cell
-                   FROM documents WHERE doc_id < {_LOF_COHORT}),
-        av AS (SELECT p.doc_id AS a, p.y AS ay, p.x AS ax, {nbr} AS nbr
-               FROM p CROSS JOIN (VALUES {offs}) o(dx, dy)
-               WHERE {nbr} IS NOT NULL),
-        pairs AS (SELECT av.a, q.doc_id AS b,
-                         SQRT((av.ay - q.y) * (av.ay - q.y)
-                              + (av.ax - q.x) * (av.ax - q.x)) AS dist
-                  FROM av JOIN p q ON av.nbr = q.cell
-                  WHERE av.a <> q.doc_id),
-        knn AS (SELECT a, b, dist,
-                       ROW_NUMBER() OVER (PARTITION BY a
-                                          ORDER BY dist, b) AS rn
-                FROM pairs),
-        k5 AS (SELECT a, b, dist FROM knn WHERE rn <= {_LOF_K}),
-        full5 AS (SELECT a, COUNT(*) AS nk, MAX(dist) AS kdist
-                  FROM k5 GROUP BY 1 HAVING COUNT(*) = {_LOF_K}),
-        reach AS (SELECT k.a, k.b, GREATEST(k.dist, f.kdist) AS reach
-                  FROM k5 k JOIN full5 f ON k.b = f.a),
-        lrd AS (SELECT a, ROUND({float(_LOF_K)!r} / SUM(reach), 9) AS lrd
-                FROM reach GROUP BY 1 HAVING COUNT(*) = {_LOF_K})
-        SELECT k.a AS doc_id,
-               ROUND(SUM(lb.lrd) / {float(_LOF_K)!r} / MAX(la.lrd), 6) AS lof
-        FROM k5 k
-        JOIN lrd la ON k.a = la.a
-        JOIN lrd lb ON k.b = lb.a
-        GROUP BY 1 HAVING COUNT(*) = {_LOF_K}
-        ORDER BY lof DESC, doc_id ASC
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# geographically weighted regression (session 12)
-# ---------------------------------------------------------------------------
-
-_GWR_RES = 4
-_GWR_H = 11.25  # Gaussian bandwidth: half a res-4 cell width (degrees)
-_GWR_MIN_N = 30
-
-
-def q_gwr_cells(spark, sf_dir):
-    """GWR-lite: per res-4 cell, a Gaussian-kernel-weighted local OLS of
-    event value on latitude, fit over the events in the cell's Chebyshev-1
-    ring — the locally-varying-coefficient map (Fotheringham) that global
-    OLS (`value_correlations`) cannot express. Local coordinates are
-    centered at the cell center (x = lat − clat), so beta0 is the local
-    level and beta1 the local latitude gradient.
-
-    Scale shape: one 9-offset ring explode of the EVENT rows + a single
-    partial+final agg per cell — the kernel never materializes a
-    point×point matrix; closed-form 2-parameter WLS from five weighted
-    sums. Float protocol: per-row Gaussian weights are the same
-    expression both engines; only the final closed-form ratios round
-    (6 dp), with centered x keeping the normal-equation cancellation
-    benign; cells with n < 30 or a degenerate denominator drop."""
-    from raptor_service_spark.geo.grid import cell_center_sql
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        lat.alias("y"),
-        lng.alias("x"),
-        F.col("value").alias("v"),
-        cell_encode_col(lat, lng, _GWR_RES).alias("cell"),
-    )
-    offs = [(dx, dy) for dy in (-1, 0, 1) for dx in (-1, 0, 1)]
-    ring = F.array(
-        *[kring_neighbor_col("cell", _GWR_RES, dx, dy) for dx, dy in offs]
-    )
-    ex = pts.select("y", "x", "v", F.explode(ring).alias("tcell")).filter(
-        F.col("tcell").isNotNull()
-    )
-    clat_s, clng_s = cell_center_sql("tcell", _GWR_RES)
-    clat, clng = F.expr(clat_s), F.expr(clng_s)
-    dy_ = F.col("y") - clat
-    dx_ = F.col("x") - clng
-    wgt = F.exp(-(dy_ * dy_ + dx_ * dx_) / F.lit(_GWR_H * _GWR_H))
-    loc = ex.select(
-        "tcell",
-        wgt.alias("w"),
-        dy_.alias("lx"),  # centered local regressor: latitude offset
-        F.col("v").alias("v"),
-    )
-    s = loc.groupBy("tcell").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.sum("w").alias("sw"),
-        F.sum(F.col("w") * F.col("lx")).alias("swx"),
-        F.sum(F.col("w") * F.col("v")).alias("swy"),
-        F.sum(F.col("w") * F.col("lx") * F.col("lx")).alias("swxx"),
-        F.sum(F.col("w") * F.col("lx") * F.col("v")).alias("swxy"),
-    )
-    den = F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
-    out = (
-        s.filter((F.col("n_points") >= _GWR_MIN_N) & (den > 1e-6))
-        .select(
-            F.col("tcell").alias("cell"),
-            "n_points",
-            F.round(
-                (F.col("sw") * F.col("swxy") - F.col("swx") * F.col("swy")) / den,
-                6,
-            ).alias("beta1"),
-            F.round(
-                (F.col("swy") - (
-                    (F.col("sw") * F.col("swxy") - F.col("swx") * F.col("swy"))
-                    / den
-                ) * F.col("swx"))
-                / F.col("sw"),
-                6,
-            ).alias("beta0"),
-        )
-        .orderBy("cell")
-    )
-    return out
-
-
-def _gwr_cells_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_center_sql
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _GWR_RES)
-    offs = ", ".join(f"({dx}, {dy})" for dy in (-1, 0, 1) for dx in (-1, 0, 1))
-    nbr = kring_neighbor_sql("p.cell", _GWR_RES, "o.dx", "o.dy")
-    clat, clng = cell_center_sql("tcell", _GWR_RES)
-    h2 = repr(_GWR_H * _GWR_H)
-    return f"""
-        WITH p AS (SELECT {lat} AS y, {lng} AS x, value AS v, {cell} AS cell
-                   FROM events),
-        ex AS (SELECT p.y, p.x, p.v, {nbr} AS tcell
-               FROM p CROSS JOIN (VALUES {offs}) o(dx, dy)
-               WHERE {nbr} IS NOT NULL),
-        loc AS (SELECT tcell,
-                       EXP(-((y - {clat}) * (y - {clat})
-                             + (x - {clng}) * (x - {clng})) / {h2}) AS w,
-                       y - {clat} AS lx, v
-                FROM ex),
-        s AS (SELECT tcell, COUNT(*) AS n_points, SUM(w) AS sw,
-                     SUM(w * lx) AS swx, SUM(w * v) AS swy,
-                     SUM(w * lx * lx) AS swxx, SUM(w * lx * v) AS swxy
-              FROM loc GROUP BY 1)
-        SELECT tcell AS cell, n_points,
-               ROUND((sw * swxy - swx * swy)
-                     / (sw * swxx - swx * swx), 6) AS beta1,
-               ROUND((swy - ((sw * swxy - swx * swy)
-                             / (sw * swxx - swx * swx)) * swx) / sw, 6)
-                   AS beta0
-        FROM s
-        WHERE n_points >= {_GWR_MIN_N} AND sw * swxx - swx * swx > 1e-6
-        ORDER BY cell
-    """
-
-
-# ---------------------------------------------------------------------------
-# dasymetric reallocation (session 12)
-# ---------------------------------------------------------------------------
-
-_DASY_COARSE = 3
-_DASY_FINE = 5
-
-
-def q_dasymetric_realloc(spark, sf_dir):
-    """Dasymetric areal interpolation: res-3 event totals are reallocated
-    to res-5 subcells proportionally to the DOCUMENT density ancillary
-    raster — the census-downscaling classic (population to building
-    footprints). alloc(f) = T_coarse(f) · D(f) / ΣD over the coarse
-    parent; subcells with zero ancillary weight receive nothing. Top-30
-    fine cells by allocation.
-
-    Scale shape: two partial+final aggs (events at res 3, documents at
-    res 5) + ONE broadcast equi-join on the parent id (fine→coarse is
-    integer arithmetic, no spatial join at all). Float parity is exact:
-    the allocation is a single correctly-rounded division of exact
-    BIGINTs, rounded 6 dp."""
-    from raptor_service_spark.geo.grid import cell_parent_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    elat, elng = _latlng_cols(F.col("event_id"))
-    coarse = (
-        ev.select(cell_encode_col(elat, elng, _DASY_COARSE).alias("ccell"))
-        .groupBy("ccell")
-        .agg(F.count(F.lit(1)).alias("t_events"))
-    )
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    dlat, dlng = _latlng_cols(F.col("doc_id"))
-    fine = (
-        d.select(cell_encode_col(dlat, dlng, _DASY_FINE).alias("fcell"))
-        .groupBy("fcell")
-        .agg(F.count(F.lit(1)).alias("d_weight"))
-        .withColumn(
-            "ccell", cell_parent_col("fcell", _DASY_FINE, _DASY_COARSE)
-        )
-    )
-    tot = fine.groupBy("ccell").agg(F.sum("d_weight").alias("d_tot"))
-    return (
-        fine.join(tot, "ccell")
-        .join(F.broadcast(coarse), "ccell")
-        .select(
-            "fcell",
-            "ccell",
-            "t_events",
-            "d_weight",
-            F.round(
-                F.col("t_events").cast("double")
-                * F.col("d_weight").cast("double")
-                / F.col("d_tot").cast("double"),
-                6,
-            ).alias("alloc"),
-        )
-        .orderBy(F.desc("alloc"), F.asc("fcell"))
-        .limit(30)
-    )
-
-
-def _dasymetric_realloc_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_parent_sql
-
-    elat, elng = _latlng_sql("event_id")
-    dlat, dlng = _latlng_sql("doc_id")
-    ccell = cell_encode_sql(elat, elng, _DASY_COARSE)
-    fcell = cell_encode_sql(dlat, dlng, _DASY_FINE)
-    parent = cell_parent_sql("fcell", _DASY_FINE, _DASY_COARSE)
-    return f"""
-        WITH coarse AS (SELECT {ccell} AS ccell, COUNT(*) AS t_events
-                        FROM events GROUP BY 1),
-        fine AS (SELECT fcell, COUNT(*) AS d_weight, {parent} AS ccell FROM
-                     (SELECT {fcell} AS fcell FROM documents)
-                 GROUP BY 1),
-        tot AS (SELECT ccell, CAST(SUM(d_weight) AS BIGINT) AS d_tot
-                FROM fine GROUP BY 1)
-        SELECT f.fcell, f.ccell, c.t_events, f.d_weight,
-               ROUND(CAST(c.t_events AS DOUBLE) * CAST(f.d_weight AS DOUBLE)
-                     / CAST(t.d_tot AS DOUBLE), 6) AS alloc
-        FROM fine f
-        JOIN tot t ON f.ccell = t.ccell
-        JOIN coarse c ON f.ccell = c.ccell
-        ORDER BY alloc DESC, f.fcell ASC
-        LIMIT 30
-    """
-
-
-# ---------------------------------------------------------------------------
-# modularity of the geographic blocking of the mobility graph (session 12)
-# ---------------------------------------------------------------------------
-
-_MODQ_RES = 4
-_MODQ_COMM = 2
-
-
-def q_modularity_score(spark, sf_dir):
-    """Newman weighted modularity Q of the res-2 geographic blocking over
-    the res-4 OD mobility graph — the partition-quality diagnostic for
-    `lpa_communities`-style clusterings: per community c, contribution
-    W_c/W − (d_c/2W)², where W_c = intra-community edge weight, d_c =
-    community degree sum, W = total weight. Positive contributions mark
-    regions whose internal mobility beats the random-graph expectation.
-
-    Scale shape: one lag window → one agg to the O(cells²) weighted edge
-    list → two broadcast-sized aggs; the per-community table is O(16)
-    rows. Float parity: every input (W_c, d_c, W) is an exact BIGINT;
-    each contribution is one shared float expression rounded 9 dp, and
-    their 16-term total rounds 6 dp."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import cell_parent_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        cell_encode_col(lat, lng, _MODQ_RES).alias("cell"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tr = (
-        pts.withColumn("prev", F.lag("cell").over(w))
-        .filter(F.col("prev").isNotNull() & (F.col("prev") != F.col("cell")))
-        .select(
-            F.least("prev", "cell").alias("i"), F.greatest("prev", "cell").alias("j")
-        )
-    )
-    edges = tr.groupBy("i", "j").agg(F.count(F.lit(1)).alias("wt"))
-    wtot = edges.agg(F.sum("wt").alias("w2"))  # W = total edge weight
-    ci = cell_parent_col("i", _MODQ_RES, _MODQ_COMM)
-    cj = cell_parent_col("j", _MODQ_RES, _MODQ_COMM)
-    # degree sums per community: each edge adds wt to both endpoints
-    deg = (
-        edges.select(ci.alias("comm"), "wt")
-        .unionByName(edges.select(cj.alias("comm"), "wt"))
-        .groupBy("comm")
-        .agg(F.sum("wt").alias("d_c"))
-    )
-    intra = (
-        edges.filter(ci == cj)
-        .select(ci.alias("comm"), "wt")
-        .groupBy("comm")
-        .agg(F.sum("wt").alias("w_c"))
-    )
-    per = (
-        deg.join(intra, "comm", "left")
-        .select("comm", F.coalesce("w_c", F.lit(0)).alias("w_c"), "d_c")
-        .crossJoin(F.broadcast(wtot))
-    )
-    wc = F.col("w_c").cast("double")
-    dc = F.col("d_c").cast("double")
-    w2 = F.col("w2").cast("double")
-    return per.select(
-        "comm",
-        "w_c",
-        "d_c",
-        F.round(wc / w2 - (dc / (F.lit(2.0) * w2)) * (dc / (F.lit(2.0) * w2)), 9).alias(
-            "contrib"
-        ),
-    ).orderBy("comm")
-
-
-def _modularity_score_sql() -> str:
-    from raptor_service_spark.geo.grid import cell_parent_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _MODQ_RES)
-    ci = cell_parent_sql("i", _MODQ_RES, _MODQ_COMM)
-    cj = cell_parent_sql("j", _MODQ_RES, _MODQ_COMM)
-    return f"""
-        WITH p AS (SELECT user_id, ts, event_id, {cell} AS cell FROM events),
-        tr AS (SELECT LEAST(prev, cell) AS i, GREATEST(prev, cell) AS j FROM
-                   (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS prev
-                    FROM p)
-               WHERE prev IS NOT NULL AND prev <> cell),
-        edges AS (SELECT i, j, COUNT(*) AS wt FROM tr GROUP BY 1, 2),
-        wtot AS (SELECT CAST(SUM(wt) AS BIGINT) AS w2 FROM edges),
-        deg AS (SELECT comm, CAST(SUM(wt) AS BIGINT) AS d_c FROM (
-                    SELECT {ci} AS comm, wt FROM edges
-                    UNION ALL SELECT {cj} AS comm, wt FROM edges)
-                GROUP BY 1),
-        intra AS (SELECT {ci} AS comm, CAST(SUM(wt) AS BIGINT) AS w_c
-                  FROM edges WHERE {ci} = {cj} GROUP BY 1)
-        SELECT deg.comm, COALESCE(intra.w_c, 0) AS w_c, deg.d_c,
-               ROUND(CAST(COALESCE(intra.w_c, 0) AS DOUBLE)
-                         / CAST(wtot.w2 AS DOUBLE)
-                     - (CAST(deg.d_c AS DOUBLE)
-                        / (2.0 * CAST(wtot.w2 AS DOUBLE)))
-                       * (CAST(deg.d_c AS DOUBLE)
-                          / (2.0 * CAST(wtot.w2 AS DOUBLE))), 9) AS contrib
-        FROM deg LEFT JOIN intra ON deg.comm = intra.comm
-        CROSS JOIN wtot
-        ORDER BY deg.comm
-    """
-
-
-# ---------------------------------------------------------------------------
-# exact-integer ridge regression (session 12)
-# ---------------------------------------------------------------------------
-
-_RIDGE_LAMBDAS = (0.0, 1.0, 10.0)
-
-
-def q_ridge_regression(spark, sf_dir):
-    """Closed-form ridge regression of n_chars on two COLLINEAR features
-    (whitespace token count vs separator-space count — near-duplicate
-    predictors by construction: spaces = tokens − 1 on clean text) across
-    a shrinkage path λ ∈ {0, 1, 10} — the regularized-linear-model kernel
-    `logreg_train`/`decision_stump` don't cover, on exactly the feature
-    pairing (near-duplicate predictors) where OLS is unstable and ridge
-    shrinks. Per λ: β = (M + λI)⁻¹ c from centered second moments, 2×2
-    closed form.
-
-    Float parity is EXACT by construction: every sum (Σx, Σx², Σxy) is an
-    exact BIGINT (counts bounded so products stay < 2⁵³), and the entire
-    float tail is one shared scalar expression over those integers —
-    there is no summation-order exposure at all (the spearman_corr
-    discipline). Scale shape: ONE partial+final agg; the λ path is a
-    3-row literal cross join."""
-    from raptor_service_spark.functions.text import token_count
-
-    d = _read(spark, sf_dir, "documents").select(
-        token_count(F.col("text")).cast("long").alias("x1"),
-        F.expr("CAST(length(text) - length(replace(text, ' ', '')) AS BIGINT)").alias(
-            "x2"
-        ),
-        F.col("n_chars").alias("y"),
-    )
-    s = d.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum("x2").alias("s2"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
-    )
-    lam = spark.createDataFrame(
-        [(float(l),) for l in _RIDGE_LAMBDAS], "lam double"
-    )
-    j = s.crossJoin(F.broadcast(lam))
-    nd = F.col("n").cast("double")
-    m11 = F.col("s11") / nd - (F.col("s1") / nd) * (F.col("s1") / nd)
-    m12 = F.col("s12") / nd - (F.col("s1") / nd) * (F.col("s2") / nd)
-    m22 = F.col("s22") / nd - (F.col("s2") / nd) * (F.col("s2") / nd)
-    c1 = F.col("s1y") / nd - (F.col("s1") / nd) * (F.col("sy") / nd)
-    c2 = F.col("s2y") / nd - (F.col("s2") / nd) * (F.col("sy") / nd)
-    det = (m11 + F.col("lam")) * (m22 + F.col("lam")) - m12 * m12
-    b1 = F.round(((m22 + F.col("lam")) * c1 - m12 * c2) / det, 6)
-    b2 = F.round(((m11 + F.col("lam")) * c2 - m12 * c1) / det, 6)
-    return (
-        j.filter(det > 1e-12)
-        .select(
-            F.col("lam").alias("lambda"),
-            "n",
-            b1.alias("beta1"),
-            b2.alias("beta2"),
-            F.round(
-                F.col("sy") / nd - b1 * (F.col("s1") / nd) - b2 * (F.col("s2") / nd),
-                6,
-            ).alias("beta0"),
-        )
-        .orderBy("lambda")
-    )
-
-
-def _ridge_regression_sql() -> str:
-    from raptor_service_spark.functions.text import token_count_sql
-
-    x1 = token_count_sql("text")
-    x2 = "(length(text) - length(replace(text, ' ', '')))"
-    lams = ", ".join(f"({float(l)!r})" for l in _RIDGE_LAMBDAS)
-    m11 = "(s11 / nd - (s1 / nd) * (s1 / nd))"
-    m12 = "(s12 / nd - (s1 / nd) * (s2 / nd))"
-    m22 = "(s22 / nd - (s2 / nd) * (s2 / nd))"
-    c1 = "(s1y / nd - (s1 / nd) * (sy / nd))"
-    c2 = "(s2y / nd - (s2 / nd) * (sy / nd))"
-    det = f"(({m11} + lam) * ({m22} + lam) - {m12} * {m12})"
-    b1 = f"ROUND((({m22} + lam) * {c1} - {m12} * {c2}) / {det}, 6)"
-    b2 = f"ROUND((({m11} + lam) * {c2} - {m12} * {c1}) / {det}, 6)"
-    return f"""
-        WITH d AS (SELECT CAST({x1} AS BIGINT) AS x1,
-                          CAST({x2} AS BIGINT) AS x2, n_chars AS y
-                   FROM documents),
-        s AS (SELECT COUNT(*) AS n,
-                     CAST(SUM(x1) AS BIGINT) AS s1,
-                     CAST(SUM(x2) AS BIGINT) AS s2,
-                     CAST(SUM(y) AS BIGINT) AS sy,
-                     CAST(SUM(x1 * x1) AS BIGINT) AS s11,
-                     CAST(SUM(x1 * x2) AS BIGINT) AS s12,
-                     CAST(SUM(x2 * x2) AS BIGINT) AS s22,
-                     CAST(SUM(x1 * y) AS BIGINT) AS s1y,
-                     CAST(SUM(x2 * y) AS BIGINT) AS s2y
-              FROM d),
-        j AS (SELECT s.*, CAST(n AS DOUBLE) AS nd,
-                     CAST(l.lam AS DOUBLE) AS lam
-              FROM s CROSS JOIN (VALUES {lams}) l(lam))
-        SELECT lam AS lambda, n, {b1} AS beta1, {b2} AS beta2,
-               ROUND(sy / nd - {b1} * (s1 / nd) - {b2} * (s2 / nd), 6)
-                   AS beta0
-        FROM j WHERE {det} > 1e-12
-        ORDER BY lambda
-    """
-
-
-# ---------------------------------------------------------------------------
-# Dunning log-likelihood-ratio collocations (session 12)
-# ---------------------------------------------------------------------------
-
-_LLR_MIN = 5
-
-
-def q_llr_bigrams(spark, sf_dir):
-    """Dunning G² log-likelihood-ratio bigram collocations — the
-    count-robust complement to `pmi_bigrams` (PMI over-ranks rare pairs;
-    G² is the significance-weighted standard). Contingency table per
-    bigram (a,b) over the bigram stream: k11 = c(a,b), marginals r = c(a,·)
-    and c = c(·,b), N = total bigrams; G² = 2·Σ k·ln(k/e) over the four
-    cells (0-count cells contribute 0). Top-20 by G².
-
-    Scale shape: bigrams are built ARRAY-side per doc (no window
-    self-join); counts are three hash aggs over the pair stream; the
-    marginal joins broadcast (vocab-bounded). Float parity: every
-    count is an exact BIGINT and G² is one shared ln-expression over
-    those integers, rounded 6 dp."""
-    d = _read(spark, sf_dir, "documents").select("text")
-    toks = d.select(
-        F.split(F.trim(F.col("text")), r"\s+").alias("arr")
-    ).filter(F.size("arr") >= 2)
-    pairs = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(arr) - 1), "
-                "i -> struct(element_at(arr, i) AS a, element_at(arr, i + 1) AS b))"
-            )
-        ).alias("p")
-    ).select("p.a", "p.b")
-    cab = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("k11"))
-    ra = pairs.groupBy("a").agg(F.count(F.lit(1)).alias("r1"))
-    cb = pairs.groupBy("b").agg(F.count(F.lit(1)).alias("c1"))
-    ntot = pairs.agg(F.count(F.lit(1)).alias("nn"))
-    j = (
-        cab.filter(F.col("k11") >= _LLR_MIN)
-        .join(F.broadcast(ra), "a")
-        .join(F.broadcast(cb), "b")
-        .join(F.broadcast(ntot))
-    )
-    term = (
-        "CASE WHEN {k} > 0 THEN {k} * LN(CAST({k} AS DOUBLE) * nn "
-        "/ (CAST({r} AS DOUBLE) * {c})) ELSE 0.0 END"
-    )
-    g2 = F.expr(
-        "ROUND(2.0 * ("
-        + term.format(k="k11", r="r1", c="c1")
-        + " + "
-        + term.format(k="(r1 - k11)", r="r1", c="(nn - c1)")
-        + " + "
-        + term.format(k="(c1 - k11)", r="(nn - r1)", c="c1")
-        + " + "
-        + term.format(k="(nn - r1 - c1 + k11)", r="(nn - r1)", c="(nn - c1)")
-        + "), 6)"
-    )
-    return (
-        j.select("a", "b", "k11", g2.alias("g2"))
-        .orderBy(F.desc("g2"), "a", "b")
-        .limit(20)
-    )
-
-
-def _llr_bigrams_sql() -> str:
-    term = (
-        "CASE WHEN {k} > 0 THEN {k} * LN(CAST({k} AS DOUBLE) * nn "
-        "/ (CAST({r} AS DOUBLE) * {c})) ELSE 0.0 END"
-    )
-    g2 = (
-        "ROUND(2.0 * ("
-        + term.format(k="k11", r="r1", c="c1")
-        + " + "
-        + term.format(k="(r1 - k11)", r="r1", c="(nn - c1)")
-        + " + "
-        + term.format(k="(c1 - k11)", r="(nn - r1)", c="c1")
-        + " + "
-        + term.format(k="(nn - r1 - c1 + k11)", r="(nn - r1)", c="(nn - c1)")
-        + "), 6)"
-    )
-    return f"""
-        WITH toks AS (SELECT regexp_split_to_array(trim(text), '\\s+') AS arr
-                      FROM documents
-                      WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 2),
-        pairs AS (SELECT arr[i] AS a, arr[i + 1] AS b
-                  FROM toks, UNNEST(generate_series(1, len(arr) - 1)) t(i)),
-        cab AS (SELECT a, b, COUNT(*) AS k11 FROM pairs GROUP BY 1, 2),
-        ra AS (SELECT a, COUNT(*) AS r1 FROM pairs GROUP BY 1),
-        cb AS (SELECT b, COUNT(*) AS c1 FROM pairs GROUP BY 1),
-        ntot AS (SELECT COUNT(*) AS nn FROM pairs)
-        SELECT cab.a, cab.b, cab.k11, {g2} AS g2
-        FROM cab
-        JOIN ra ON cab.a = ra.a
-        JOIN cb ON cab.b = cb.b
-        CROSS JOIN ntot
-        WHERE cab.k11 >= {_LLR_MIN}
-        ORDER BY g2 DESC, cab.a, cab.b
-        LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# D8 flow directions over the event raster (session 12)
-# ---------------------------------------------------------------------------
-
-# D8 compass offsets in fixed index order (E, NE, N, NW, W, SW, S, SE)
-_D8 = [(0, (1, 0)), (1, (1, 1)), (2, (0, 1)), (3, (-1, 1)),
-       (4, (-1, 0)), (5, (-1, -1)), (6, (0, -1)), (7, (1, -1))]
-_D8_RES = 6
-
-
-def q_d8_flow_dirs(spark, sf_dir):
-    """D8 flow-direction histogram — the hydrology raster classic run on
-    the event-count surface: each occupied res-6 cell drains toward the
-    neighbor with the steepest positive drop (tie → lowest direction
-    index, the ESRI convention); plateau/pit cells are sinks (dir −1).
-    Output: cells per direction.
-
-    Scale shape: one agg to the raster, an 8-offset explode, one
-    broadcast self-join for neighbor elevations, one window argmax —
-    all-integer arithmetic end to end (the viewshed/od_raster parity
-    family: no float anywhere)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    raster = (
-        ev.select(cell_encode_col(lat, lng, _D8_RES).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("elev"))
-        .localCheckpoint(eager=True)
-    )
-    arms = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias("dir"),
-                kring_neighbor_col("cell", _D8_RES, dx, dy).alias("nbr"),
-            )
-            for d, (dx, dy) in _D8
-        ]
-    )
-    ex = raster.select(
-        "cell", "elev", F.explode(arms).alias("o")
-    ).select("cell", "elev", "o.dir", "o.nbr").filter(F.col("nbr").isNotNull())
-    nb = raster.select(
-        F.col("cell").alias("nbr"), F.col("elev").alias("nelev")
-    )
-    drops = ex.join(F.broadcast(nb), "nbr", "left").select(
-        "cell",
-        "dir",
-        (F.col("elev") - F.coalesce("nelev", F.lit(0))).alias("drop"),
-    )
-    w = Window.partitionBy("cell").orderBy(F.desc("drop"), F.asc("dir"))
-    best = drops.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") == 1
-    )
-    return (
-        best.select(
-            F.when(F.col("drop") > 0, F.col("dir")).otherwise(F.lit(-1)).alias(
-                "dir"
-            )
-        )
-        .groupBy("dir")
-        .agg(F.count(F.lit(1)).alias("n_cells"))
-        .orderBy("dir")
-    )
-
-
-def _d8_flow_dirs_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _D8_RES)
-    offs = ", ".join(f"({d}, {dx}, {dy})" for d, (dx, dy) in _D8)
-    nbr = kring_neighbor_sql("r.cell", _D8_RES, "o.dx", "o.dy")
-    return f"""
-        WITH r AS (SELECT cell, COUNT(*) AS elev FROM
-                       (SELECT {cell} AS cell FROM events)
-                   GROUP BY 1),
-        ex AS (SELECT r.cell, r.elev, o.dir, {nbr} AS nbr
-               FROM r CROSS JOIN (VALUES {offs}) o(dir, dx, dy)
-               WHERE {nbr} IS NOT NULL),
-        drops AS (SELECT ex.cell, ex.dir,
-                         ex.elev - COALESCE(n.elev, 0) AS dr
-                  FROM ex LEFT JOIN r n ON ex.nbr = n.cell),
-        best AS (SELECT cell, dir, dr,
-                        ROW_NUMBER() OVER (PARTITION BY cell
-                                           ORDER BY dr DESC, dir ASC) AS rn
-                 FROM drops)
-        SELECT CASE WHEN dr > 0 THEN dir ELSE -1 END AS dir,
-               COUNT(*) AS n_cells
-        FROM best WHERE rn = 1
-        GROUP BY 1 ORDER BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# nearest-centroid classifier evaluation (session 12)
-# ---------------------------------------------------------------------------
-
-_NCC_DIM = 64
-
-
-def q_nearest_centroid_eval(spark, sf_dir):
-    """Nearest-centroid (Rocchio) classification of the embedding table
-    against its own label column, reported as a confusion matrix — the
-    vector-space sibling of `nb_langid`: train = per-label mean vector,
-    predict = argmin cosine distance, the centroid classifier every
-    embedding-quality audit starts with.
-
-    Scale shape: centroids come from ONE dim-exploded partial+final agg
-    (labels×64 rows); scoring joins each embedding's 64 dims against the
-    BROADCAST centroid table and reduces — never an embedding×embedding
-    dataflow. Float protocol: centroid coordinates pre-round 9 dp;
-    distances round 9 dp before the (dist, label) argmin, so rank
-    boundaries are deterministic ties, not float races."""
-    from pyspark.sql import Window
-
-    emb = _read(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    dims = emb.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.explode(F.sequence(F.lit(1), F.lit(_NCC_DIM))).alias("i"),
-    ).select(
-        "vec_id",
-        "label",
-        "i",
-        F.element_at("embedding", F.col("i")).cast("double").alias("val"),
-    )
-    cent = dims.groupBy(F.col("label").alias("clabel"), "i").agg(
-        F.round(F.avg("val"), 9).alias("cval")
-    )
-    sc = (
-        dims.join(F.broadcast(cent), "i")
-        .groupBy("vec_id", "label", "clabel")
-        .agg(
-            F.sum(F.col("val") * F.col("cval")).alias("dot"),
-            F.sum(F.col("val") * F.col("val")).alias("en2"),
-            F.sum(F.col("cval") * F.col("cval")).alias("cn2"),
-        )
-        .select(
-            "vec_id",
-            "label",
-            "clabel",
-            F.round(
-                F.lit(1.0)
-                - F.col("dot") / (F.sqrt(F.col("en2")) * F.sqrt(F.col("cn2"))),
-                9,
-            ).alias("d9"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy("d9", "clabel")
-    pick = sc.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return (
-        pick.groupBy(
-            F.col("label").alias("gold_label"), F.col("clabel").alias("pred_label")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("gold_label", "pred_label")
-    )
-
-
-def _nearest_centroid_eval_sql() -> str:
-    return f"""
-        WITH dims AS (SELECT e.vec_id, e.label, s.i,
-                             CAST(e.embedding[s.i] AS DOUBLE) AS val
-                      FROM embeddings e
-                      CROSS JOIN (SELECT UNNEST(generate_series(1, {_NCC_DIM}))
-                                      AS i) s),
-        cent AS (SELECT label AS clabel, i, ROUND(AVG(val), 9) AS cval
-                 FROM dims GROUP BY 1, 2),
-        sc AS (SELECT m.vec_id, m.label, c.clabel,
-                      ROUND(1.0 - SUM(m.val * c.cval)
-                            / (SQRT(SUM(m.val * m.val))
-                               * SQRT(SUM(c.cval * c.cval))), 9) AS d9
-               FROM dims m JOIN cent c ON m.i = c.i
-               GROUP BY 1, 2, 3),
-        pick AS (SELECT label, clabel,
-                        ROW_NUMBER() OVER (PARTITION BY vec_id
-                                           ORDER BY d9, clabel) AS rn
-                 FROM sc)
-        SELECT label AS gold_label, clabel AS pred_label, COUNT(*) AS n
-        FROM pick WHERE rn = 1
-        GROUP BY 1, 2 ORDER BY 1, 2
-    """
-
-
-# ---------------------------------------------------------------------------
-# D8 hydrology pair: flow accumulation + watershed basins (session 13)
-# ---------------------------------------------------------------------------
-
-
-def _d8_raster_edges(spark, sf_dir):
-    """Shared base for the hydrology pair: the res-6 event-count raster and
-    its D8 downstream forest. Unlike `d8_flow_dirs` (which lets boundary
-    cells drain into UNOCCUPIED neighbors at elevation 0), edges here are
-    restricted to occupied->occupied so the flow network is self-contained:
-    down(c) = the occupied neighbor with the steepest strictly-positive
-    drop (tie -> lowest ESRI direction index); cells with none are sinks.
-    Strictly decreasing elevation along every edge => the graph is a
-    forest (acyclic), which is what makes both iterations terminate.
-
-    Scale shape: one point shuffle to the raster, an 8-offset literal
-    explode, one O(occupied cells) self-join, one window argmax."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_col
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    raster = (
-        ev.select(cell_encode_col(lat, lng, _D8_RES).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("elev"))
-        .localCheckpoint(eager=True)
-    )
-    arms = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias("dir"),
-                kring_neighbor_col("cell", _D8_RES, dx, dy).alias("nbr"),
-            )
-            for d, (dx, dy) in _D8
-        ]
-    )
-    ex = (
-        raster.select("cell", "elev", F.explode(arms).alias("o"))
-        .select("cell", "elev", "o.dir", "o.nbr")
-        .filter(F.col("nbr").isNotNull())
-    )
-    nb = raster.select(F.col("cell").alias("nbr"), F.col("elev").alias("nelev"))
-    drops = ex.join(nb, "nbr").select(
-        "cell", "dir", (F.col("elev") - F.col("nelev")).alias("drop")
-    )
-    w = Window.partitionBy("cell").orderBy(F.desc("drop"), F.asc("dir"))
-    edges = (
-        drops.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("drop") > 0))
-        .join(
-            ex.select("cell", "dir", F.col("nbr").alias("down")), ["cell", "dir"]
-        )
-        .select("cell", "down")
-        .localCheckpoint(eager=True)
-    )
-    return raster, edges
-
-
-def _d8_edges_cte() -> str:
-    """CTEs ``r`` (cell, elev) and ``edges`` (cell, down) — the DuckDB twin
-    of _d8_raster_edges."""
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _D8_RES)
-    offs = ", ".join(f"({d}, {dx}, {dy})" for d, (dx, dy) in _D8)
-    nbr = kring_neighbor_sql("r.cell", _D8_RES, "o.dx", "o.dy")
-    return f"""
-        r AS MATERIALIZED (
-            SELECT cell, COUNT(*) AS elev FROM
-                (SELECT {cell} AS cell FROM events)
-            GROUP BY 1),
-        ex AS (SELECT r.cell, r.elev, o.dir, {nbr} AS nbr
-               FROM r CROSS JOIN (VALUES {offs}) o(dir, dx, dy)
-               WHERE {nbr} IS NOT NULL),
-        drops AS (SELECT ex.cell, ex.dir, ex.nbr AS down,
-                         ex.elev - n.elev AS dr
-                  FROM ex JOIN r n ON ex.nbr = n.cell),
-        best AS (SELECT cell, down, dr,
-                        ROW_NUMBER() OVER (PARTITION BY cell
-                                           ORDER BY dr DESC, dir ASC) AS rn
-                 FROM drops),
-        edges AS MATERIALIZED (
-            SELECT cell, down FROM best WHERE rn = 1 AND dr > 0)"""
-
-
-def q_flow_accumulation(spark, sf_dir):
-    """D8 flow accumulation — the hydrology raster classic over the res-6
-    event-count surface: acc(c) = number of cells (itself included) whose
-    downstream path passes through c; the top-20 accumulation cells are
-    the drainage trunks of the density surface. All-integer end to end.
-
-    Spark plan: weight push-down — every cell starts one unit at itself;
-    each round moves the frontier one hop down the D8 forest
-    (O(occupied cells) join + partial+final agg), terminating when the
-    frontier drains into the sinks. Rounds = longest flow path, which is
-    bounded by the maximum cell count (elevation strictly decreases along
-    every edge) — single digits to low tens on a count raster; each round
-    touches only the O(cells) frontier, never the points. The oracle
-    replays the identical forest with a recursive CTE walk."""
-    raster, edges = _d8_raster_edges(spark, sf_dir)
-    parts = [raster.select(F.col("cell").alias("at"), F.lit(1).cast("long").alias("w"))]
-    frontier = parts[0]
-    while True:
-        frontier = (
-            frontier.join(edges, frontier.at == edges.cell)
-            .groupBy(F.col("down").alias("at"))
-            .agg(F.sum("w").alias("w"))
-            .localCheckpoint(eager=True)
-        )
-        if not frontier.take(1):
-            break
-        parts.append(frontier)
-    acc = parts[0]
-    for p in parts[1:]:
-        acc = acc.unionByName(p)
-    return (
-        acc.groupBy(F.col("at").alias("cell"))
-        .agg(F.sum("w").alias("acc"))
-        .orderBy(F.desc("acc"), F.asc("cell"))
-        .limit(20)
-    )
-
-
-def _flow_accumulation_sql() -> str:
-    return f"""
-        WITH RECURSIVE {_d8_edges_cte()},
-        walk(start, at) AS (
-            SELECT cell, cell FROM r
-            UNION ALL
-            SELECT w.start, e.down FROM walk w JOIN edges e ON w.at = e.cell
-        )
-        SELECT at AS cell, CAST(COUNT(*) AS BIGINT) AS acc
-        FROM walk GROUP BY 1
-        ORDER BY acc DESC, cell LIMIT 20
-    """
-
-
-def q_watershed_basins(spark, sf_dir):
-    """Watershed delineation over the same D8 forest: every cell is
-    labeled by the sink its flow terminates at; output the 20 largest
-    basins (sink cell, member count). The complement of
-    `flow_accumulation` — same forest, but the QUESTION is partition
-    (which sink) not throughput (how much passes).
-
-    Spark plan: pointer doubling — ptr(c) starts at down(c) (sinks point
-    to themselves) and each round jumps ptr(c) <- ptr(ptr(c)), one
-    O(cells) self-join, converging in O(log depth) rounds instead of the
-    weight push-down's O(depth) (the two queries deliberately demonstrate
-    both dataflow shapes on one graph). All-integer; the oracle walks the
-    forest to termination with a recursive CTE."""
-    raster, edges = _d8_raster_edges(spark, sf_dir)
-    ptr = (
-        raster.select("cell")
-        .join(edges, "cell", "left")
-        .select("cell", F.coalesce("down", "cell").alias("nxt"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(40):
-        hop = ptr.select(F.col("cell").alias("nxt"), F.col("nxt").alias("nxt2"))
-        ptr2 = ptr.join(hop, "nxt").select("cell", F.col("nxt2").alias("nxt")).localCheckpoint(
-            eager=True
-        )
-        changed = (
-            ptr.select("cell", F.col("nxt").alias("old"))
-            .join(ptr2, "cell")
-            .filter(F.col("old") != F.col("nxt"))
-            .take(1)
-        )
-        ptr = ptr2
-        if not changed:
-            break
-    return (
-        ptr.groupBy(F.col("nxt").alias("basin"))
-        .agg(F.count(F.lit(1)).alias("n_cells"))
-        .orderBy(F.desc("n_cells"), F.asc("basin"))
-        .limit(20)
-    )
-
-
-def _watershed_basins_sql() -> str:
-    return f"""
-        WITH RECURSIVE {_d8_edges_cte()},
-        walk(start, at) AS (
-            SELECT cell, cell FROM r
-            UNION ALL
-            SELECT w.start, e.down FROM walk w JOIN edges e ON w.at = e.cell
-        ),
-        term AS (
-            SELECT start, at FROM walk
-            WHERE at NOT IN (SELECT cell FROM edges)
-        )
-        SELECT at AS basin, CAST(COUNT(*) AS BIGINT) AS n_cells
-        FROM term GROUP BY 1
-        ORDER BY n_cells DESC, basin LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# Katz centrality (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_katz_centrality(spark, sf_dir):
-    """Katz centrality over the res-3 OD cell-transition graph — the
-    walk-counting complement to `cell_pagerank` on the SAME edges: no
-    out-degree normalization, so tiles fed by prolific hubs score high
-    instead of having the hub's mass diluted across its fanout. Fixed 4
-    iterations of x <- 1 + 0.05 * A^T x, per-round 9-dp rounding; top-20
-    tiles. Scale shape: see `operators/cell_graph.katz` (one O(nodes)
-    join + agg per round)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.cell_graph import katz
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell")))
-        .select(F.col("prev_cell").alias("src"), F.col("cell").alias("dst"))
-    )
-    return (
-        katz(edges, n_iters=4, alpha=0.05)
-        .orderBy(F.desc("katz"), F.asc("cell"))
-        .limit(20)
-    )
-
-
-def _katz_centrality_sql() -> str:
-    from raptor_service_spark.operators.cell_graph import katz_sql
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    edges = f"""
-        SELECT prev_cell AS src, cell AS dst
-        FROM (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                                           ORDER BY ts, event_id) AS prev_cell
-              FROM (SELECT user_id, ts, event_id, {cell} AS cell FROM events))
-        WHERE prev_cell IS NOT NULL AND prev_cell != cell
-    """
-    inner = katz_sql(edges, n_iters=4, alpha=0.05)
-    return f"""
-        SELECT * FROM ({inner})
-        ORDER BY katz DESC, cell LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# daily mobility motifs (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_mobility_motifs(spark, sf_dir):
-    """Daily mobility motif census (Schneider et al. 2013 style): each
-    (user, day) trajectory at res-4 is classified by its distinct-location
-    count and whether it closes (first cell == last cell) — stationary /
-    commute / excursion / tour / wander. Output per motif: user-day count,
-    distinct users, total points. All-integer (counts + string compare);
-    the per-day first/last cells come from two mirror-ordered window
-    first_value's so Spark and DuckDB tie-break identically on
-    (ts, event_id).
-
-    Scale shape: ONE user-day window shuffle over the points, then
-    O(user-days) aggregation — the user_sessions partitioning reused."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-        cell_encode_col(lat, lng, 4).alias("cell"),
-    )
-    wf = Window.partitionBy("user_id", "day").orderBy("ts", "event_id")
-    wl = Window.partitionBy("user_id", "day").orderBy(F.desc("ts"), F.desc("event_id"))
-    per = (
-        pts.select(
-            "user_id",
-            "day",
-            "cell",
-            F.first("cell").over(wf).alias("first_cell"),
-            F.first("cell").over(wl).alias("last_cell"),
-        )
-        .groupBy("user_id", "day", "first_cell", "last_cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_pts"),
-            F.countDistinct("cell").alias("n_loc"),
-        )
-    )
-    motif = (
-        F.when(F.col("n_loc") == 1, F.lit("stationary"))
-        .when(
-            (F.col("n_loc") == 2) & (F.col("first_cell") == F.col("last_cell")),
-            F.lit("commute"),
-        )
-        .when(F.col("n_loc") == 2, F.lit("excursion"))
-        .when(F.col("first_cell") == F.col("last_cell"), F.lit("tour"))
-        .otherwise(F.lit("wander"))
-    )
-    return (
-        per.select(motif.alias("motif"), "user_id", "n_pts")
-        .groupBy("motif")
-        .agg(
-            F.count(F.lit(1)).alias("n_user_days"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.sum("n_pts").alias("n_points"),
-        )
-        .orderBy("motif")
-    )
-
-
-def _mobility_motifs_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH pts AS (
-            SELECT user_id, ts, event_id,
-                   strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                   {cell} AS cell
-            FROM events),
-        per AS (
-            SELECT user_id, day, first_cell, last_cell,
-                   CAST(COUNT(*) AS BIGINT) AS n_pts,
-                   COUNT(DISTINCT cell) AS n_loc
-            FROM (SELECT user_id, day, cell,
-                         FIRST_VALUE(cell) OVER (PARTITION BY user_id, day
-                             ORDER BY ts, event_id) AS first_cell,
-                         FIRST_VALUE(cell) OVER (PARTITION BY user_id, day
-                             ORDER BY ts DESC, event_id DESC) AS last_cell
-                  FROM pts)
-            GROUP BY 1, 2, 3, 4)
-        SELECT CASE WHEN n_loc = 1 THEN 'stationary'
-                    WHEN n_loc = 2 AND first_cell = last_cell THEN 'commute'
-                    WHEN n_loc = 2 THEN 'excursion'
-                    WHEN first_cell = last_cell THEN 'tour'
-                    ELSE 'wander' END AS motif,
-               CAST(COUNT(*) AS BIGINT) AS n_user_days,
-               COUNT(DISTINCT user_id) AS n_users,
-               CAST(SUM(n_pts) AS BIGINT) AS n_points
-        FROM per
-        GROUP BY 1 ORDER BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# Jaro-Winkler similarity join (session 13)
-# ---------------------------------------------------------------------------
-
-_JW_WINDOW = 8
-_JW_THRESH = 0.8
-
-
-def q_jw_title_pairs(spark, sf_dir):
-    """Jaro-Winkler similarity join on document titles (first 3 words) —
-    the 7th string-similarity family (after PassJoin, SNM, Monge-Elkan,
-    n-gram Jaccard, SimHash, MinHash), and the one with a genuinely
-    INDEPENDENT oracle: DuckDB's built-in jaro_winkler_similarity
-    (vendored rapidfuzz) versus this repo's from-scratch numpy kernel
-    (`operators/stringsim.py`, fuzz-pinned bit-exact on 8k pairs incl.
-    multibyte). Candidates are blocked-SNM (the snm_pairs posture):
-    block by the title's first 2 chars, sort within block, pair each
-    row with its next 8 in sorted order — O(n·w) bounded fanout, never
-    all-pairs; keep pairs with round(jw, 6) >= 0.8.
-
-    Scale shape: ONE block-partitioned window shuffle over the O(docs)
-    title table (all 8 leads in one select — one sort, no
-    single-reducer global window), then an Arrow-batched pandas UDF
-    over the bounded candidate set."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.stringsim import jw_similarity
-
-    d = _read(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_TITLE_SPARK).alias("title")
-    ).withColumn("blk", F.substring("title", 1, 2))
-    w = Window.partitionBy("blk").orderBy("title", "doc_id")
-    lw = d.select(
-        "doc_id",
-        "title",
-        *[
-            c
-            for k in range(1, _JW_WINDOW + 1)
-            for c in (
-                F.lead("doc_id", k).over(w).alias(f"db{k}"),
-                F.lead("title", k).over(w).alias(f"tb{k}"),
-            )
-        ],
-    )
-    arms = F.array(
-        *[
-            F.struct(
-                F.col(f"db{k}").alias("doc_b"), F.col(f"tb{k}").alias("title_b")
-            )
-            for k in range(1, _JW_WINDOW + 1)
-        ]
-    )
-    cands = (
-        lw.select("doc_id", "title", F.explode(arms).alias("o"))
-        .select("doc_id", "title", "o.doc_b", "o.title_b")
-        .filter(F.col("doc_b").isNotNull())
-    )
-    scored = cands.select(
-        F.least("doc_id", "doc_b").alias("doc_a"),
-        F.greatest("doc_id", "doc_b").alias("doc_b"),
-        F.round(jw_similarity(F.col("title"), F.col("title_b")), 6).alias("jw"),
-    ).filter(F.col("jw") >= _JW_THRESH)
-    return scored.orderBy(F.desc("jw"), "doc_a", "doc_b").limit(50)
-
-
-def _jw_title_pairs_sql() -> str:
-    legs = ", ".join(
-        f"""LEAD(doc_id, {k}) OVER (PARTITION BY blk ORDER BY title, doc_id)
-                AS db{k},
-            LEAD(title, {k}) OVER (PARTITION BY blk ORDER BY title, doc_id)
-                AS tb{k}"""
-        for k in range(1, _JW_WINDOW + 1)
-    )
-    unp = " UNION ALL ".join(
-        f"SELECT doc_id, title, db{k} AS doc_b, tb{k} AS title_b FROM lw"
-        for k in range(1, _JW_WINDOW + 1)
-    )
-    return f"""
-        WITH t AS (SELECT doc_id, {_TITLE_SQL} AS title,
-                          substr({_TITLE_SQL}, 1, 2) AS blk
-                   FROM documents),
-        lw AS (SELECT doc_id, title, blk, {legs} FROM t),
-        c AS ({unp})
-        SELECT doc_a, doc_b, jw FROM (
-            SELECT LEAST(doc_id, doc_b) AS doc_a,
-                   GREATEST(doc_id, doc_b) AS doc_b,
-                   ROUND(jaro_winkler_similarity(title, title_b), 6) AS jw
-            FROM c WHERE doc_b IS NOT NULL)
-        WHERE jw >= {_JW_THRESH}
-        ORDER BY jw DESC, doc_a, doc_b LIMIT 50
-    """
-
-
-# ---------------------------------------------------------------------------
-# Cochran-Armitage trend test (session 13)
-# ---------------------------------------------------------------------------
-
-# z and z^2 as ONE shared scalar-SQL tail over exact-integer aggregates
-# (n, r, swn, swr, sw2n) — identical text in Spark and DuckDB, so there is
-# zero summation-order or op-order exposure (the spearman/ridge discipline).
-_CA_Z = (
-    "(CAST(swr AS DOUBLE) - CAST(r AS DOUBLE) * swn / n) / "
-    "SQRT((CAST(r AS DOUBLE) / n) * (1.0 - CAST(r AS DOUBLE) / n) "
-    "* (sw2n - CAST(swn AS DOUBLE) * swn / n))"
-)
-
-
-def q_cochran_armitage(spark, sf_dir):
-    """Cochran-Armitage trend test: is the purchase share monotonically
-    trending across the 24 ordered hour-of-day groups (scores w=0..23)?
-    The ordered-categories complement to `chi2_independence` (which
-    ignores order) and `ab_proportions` (2 groups). T = Σw·r − (R/N)Σw·n,
-    Var = p(1−p)[Σw²n − (Σwn)²/N]; every Σ is an exact BIGINT so the z
-    statistic is one shared float expression — exact cross-engine parity.
-
-    Scale shape: ONE partial+final agg over the events (24 groups), then
-    scalar arithmetic on a 1-row table."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.hour("ts").cast("long").alias("w"),
-        (F.col("event_type") == "purchase").cast("long").alias("s"),
-    )
-    agg = ev.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("s").alias("r"),
-        F.sum("w").alias("swn"),
-        F.sum(F.col("w") * F.col("s")).alias("swr"),
-        F.sum(F.col("w") * F.col("w")).alias("sw2n"),
-    )
-    return agg.select(
-        "n",
-        "r",
-        "swr",
-        F.round(F.expr(_CA_Z), 6).alias("z"),
-        F.round(F.expr(f"POW({_CA_Z}, 2)"), 6).alias("z2"),
-    )
-
-
-def _cochran_armitage_sql() -> str:
-    return f"""
-        WITH agg AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS r,
-                   CAST(SUM(w) AS BIGINT) AS swn,
-                   CAST(SUM(w * CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS swr,
-                   CAST(SUM(w * w) AS BIGINT) AS sw2n
-            FROM (SELECT event_type, CAST(hour(ts) AS BIGINT) AS w FROM events))
-        SELECT n, r, swr,
-               ROUND({_CA_Z}, 6) AS z,
-               ROUND(POW({_CA_Z}, 2), 6) AS z2
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# SimRank (session 13)
-# ---------------------------------------------------------------------------
-
-_SIMRANK_C = 0.8
-
-
-def q_simrank_pairs(spark, sf_dir):
-    """SimRank (Jeh & Widom 2002) on the res-3 OD cell-transition graph:
-    two tiles are similar if they are POINTED TO by similar tiles —
-    structural-equivalence scoring, the similarity complement to the
-    centrality family (pagerank/katz/hits). Two exact iterations from
-    s0 = identity, relationally: s1(a,b) = C·|I(a)∩I(b)|/(|I(a)||I(b)|);
-    s2 re-propagates s1 (diagonal pinned at 1) through one more
-    in-neighbor pair join. Per-iteration 9-dp rounding; top-20 pairs
-    (a < b, symmetric). The pair table is bounded by the res-3 grid
-    (≤64 nodes, ≤4k pairs) at ANY data scale — the iteration cost is
-    O(edges²/nodes) joins, never O(points)."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    e = (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell")))
-        .select(F.col("prev_cell").alias("src"), F.col("cell").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    indeg = e.groupBy(F.col("dst").alias("v")).agg(F.count(F.lit(1)).alias("d"))
-    # s1(a,b) = C * |I(a) ∩ I(b)| / (d_a * d_b), a != b
-    common = (
-        e.select(F.col("src").alias("u"), F.col("dst").alias("a"))
-        .join(e.select(F.col("src").alias("u"), F.col("dst").alias("b")), "u")
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    s1 = (
-        common.join(indeg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a")
-        .join(indeg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
-        .select(
-            "a",
-            "b",
-            F.round(
-                F.lit(_SIMRANK_C) * F.col("cnt") / (F.col("da") * F.col("db")), 9
-            ).alias("s"),
-        )
-    )
-    diag = indeg.select(
-        F.col("v").alias("a"), F.col("v").alias("b"), F.lit(1.0).alias("s")
-    )
-    s1full = s1.unionByName(diag).localCheckpoint(eager=True)
-    # s2(a,b) = C/(d_a d_b) * sum_{u in I(a), v in I(b)} s1full(u, v)
-    s2 = (
-        s1full.withColumnRenamed("a", "u")
-        .withColumnRenamed("b", "v")
-        .join(e.select(F.col("src").alias("u"), F.col("dst").alias("a")), "u")
-        .join(e.select(F.col("src").alias("v"), F.col("dst").alias("b")), "v")
-        .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.sum("s").alias("ssum"))
-        .join(indeg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a")
-        .join(indeg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
-        .select(
-            "a",
-            "b",
-            F.round(
-                F.lit(_SIMRANK_C) * F.round(F.col("ssum"), 9) / (F.col("da") * F.col("db")),
-                9,
-            ).alias("s2"),
-        )
-    )
-    return (
-        s2.filter(F.col("a") < F.col("b"))
-        .select("a", "b", F.round("s2", 6).alias("simrank"))
-        .orderBy(F.desc("simrank"), "a", "b")
-        .limit(20)
-    )
-
-
-def _simrank_pairs_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    c = _SIMRANK_C
-    return f"""
-        WITH e AS MATERIALIZED (
-            SELECT DISTINCT prev_cell AS src, cell AS dst
-            FROM (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                                               ORDER BY ts, event_id) AS prev_cell
-                  FROM (SELECT user_id, ts, event_id, {cell} AS cell FROM events))
-            WHERE prev_cell IS NOT NULL AND prev_cell != cell),
-        indeg AS (SELECT dst AS v, COUNT(*) AS d FROM e GROUP BY 1),
-        common AS (
-            SELECT e1.dst AS a, e2.dst AS b, COUNT(*) AS cnt
-            FROM e e1 JOIN e e2 ON e1.src = e2.src AND e1.dst != e2.dst
-            GROUP BY 1, 2),
-        s1 AS (
-            SELECT c.a, c.b,
-                   ROUND({c} * c.cnt / (ia.d * ib.d), 9) AS s
-            FROM common c
-            JOIN indeg ia ON c.a = ia.v
-            JOIN indeg ib ON c.b = ib.v),
-        s1full AS MATERIALIZED (
-            SELECT a, b, s FROM s1
-            UNION ALL SELECT v, v, 1.0 FROM indeg),
-        s2 AS (
-            SELECT ea.dst AS a, eb.dst AS b,
-                   ROUND(SUM(s.s), 9) AS ssum
-            FROM s1full s
-            JOIN e ea ON ea.src = s.a
-            JOIN e eb ON eb.src = s.b AND ea.dst != eb.dst
-            GROUP BY 1, 2)
-        SELECT a, b,
-               ROUND(ROUND({c} * ssum / (ia.d * ib.d), 9), 6) AS simrank
-        FROM s2
-        JOIN indeg ia ON s2.a = ia.v
-        JOIN indeg ib ON s2.b = ib.v
-        WHERE a < b
-        ORDER BY simrank DESC, a, b LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# generalized ESD outlier rounds (session 13)
-# ---------------------------------------------------------------------------
-
-# R statistic as a shared scalar tail over exact integers (n, sx, sxx) and
-# the day's count x — identical text both engines.
-_GESD_DEV = "ABS(x - CAST(sx AS DOUBLE) / n)"
-_GESD_R = (
-    f"{_GESD_DEV} / SQRT((sxx - CAST(sx AS DOUBLE) * sx / n) / (n - 1))"
-)
-
-
-def q_gesd_outliers(spark, sf_dir):
-    """Generalized ESD outlier rounds (Rosner 1983) on the daily event-count
-    series: 3 rounds of remove-the-extreme-then-recompute — the masking-
-    robust upgrade to the one-shot `mad_outliers` z-screen. Each round's
-    mean/sd come from exact BIGINT sums over the REMAINING days, and the
-    R statistic is one shared float expression (zero summation-order
-    exposure); argmax tie -> earliest day. Output: (round, day, x, r_stat).
-
-    Scale shape: one partial+final agg over the points builds the O(days)
-    series; each round is scalar arithmetic + a 1-row argmax on that tiny
-    table (3 rounds, driver holds only round counters)."""
-    days = (
-        _read(spark, sf_dir, "events")
-        .groupBy(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"))
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    out = []
-    for rnd in range(1, 4):
-        stats = days.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        )
-        scored = days.crossJoin(stats).select(
-            "day",
-            "x",
-            F.expr(_GESD_DEV).alias("dev"),
-            F.round(F.expr(_GESD_R), 6).alias("r_stat"),
-        )
-        top = (
-            scored.orderBy(F.desc("dev"), F.asc("day"))
-            .limit(1)
-            .select(F.lit(rnd).alias("round"), "day", "x", "r_stat")
-            .localCheckpoint(eager=True)
-        )
-        out.append(top)
-        days = days.join(top.select("day"), "day", "left_anti").localCheckpoint(
-            eager=True
-        )
-    res = out[0]
-    for t in out[1:]:
-        res = res.unionByName(t)
-    return res.orderBy("round")
-
-
-def _gesd_outliers_sql() -> str:
-    steps = []
-    prev = "d0"
-    for rnd in range(1, 4):
-        steps.append(
-            f"""s{rnd} AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                          CAST(SUM(x) AS BIGINT) AS sx,
-                          CAST(SUM(x * x) AS BIGINT) AS sxx
-                   FROM {prev}),
-        r{rnd} AS (SELECT day, x, {_GESD_DEV} AS dev,
-                          ROUND({_GESD_R}, 6) AS r_stat
-                   FROM {prev} CROSS JOIN s{rnd}),
-        p{rnd} AS (SELECT {rnd} AS round, day, x, r_stat
-                   FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY dev DESC, day) AS rn
-                         FROM r{rnd})
-                   WHERE rn = 1),
-        d{rnd} AS (SELECT day, x FROM {prev}
-                   WHERE day NOT IN (SELECT day FROM p{rnd}))"""
-        )
-        prev = f"d{rnd}"
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH d0 AS (
-            SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        {chain}
-        SELECT round, day, x, r_stat FROM p1
-        UNION ALL SELECT round, day, x, r_stat FROM p2
-        UNION ALL SELECT round, day, x, r_stat FROM p3
-        ORDER BY round
-    """
-
-
-# ---------------------------------------------------------------------------
-# Damerau-Levenshtein similarity join (session 13)
-# ---------------------------------------------------------------------------
-
-_DL_MAX = 6
-
-
-def q_damerau_title_pairs(spark, sf_dir):
-    """Unrestricted Damerau-Levenshtein join on document titles — the 8th
-    string-similarity family, and the second with a fully INDEPENDENT
-    oracle: DuckDB's built-in damerau_levenshtein versus this repo's
-    from-scratch Lowrance-Wagner kernel (`operators/stringsim.py`,
-    fuzz-pinned bit-exact on 8k pairs incl. the dl('ca','abc')=2 true-DL
-    case OSA gets wrong). Distances are exact integers — zero float
-    exposure. Same blocked-SNM candidate scheme as jw_title_pairs
-    (prefix-2 block, 8-successor window, O(n·w) fanout); keep dld <= 6.
-
-    Scale shape: ONE block-partitioned window shuffle + an Arrow-batched
-    pandas UDF whose DP loop is vectorized across the candidate batch."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.stringsim import dl_distance
-
-    d = _read(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_TITLE_SPARK).alias("title")
-    ).withColumn("blk", F.substring("title", 1, 2))
-    w = Window.partitionBy("blk").orderBy("title", "doc_id")
-    lw = d.select(
-        "doc_id",
-        "title",
-        *[
-            c
-            for k in range(1, _JW_WINDOW + 1)
-            for c in (
-                F.lead("doc_id", k).over(w).alias(f"db{k}"),
-                F.lead("title", k).over(w).alias(f"tb{k}"),
-            )
-        ],
-    )
-    arms = F.array(
-        *[
-            F.struct(
-                F.col(f"db{k}").alias("doc_b"), F.col(f"tb{k}").alias("title_b")
-            )
-            for k in range(1, _JW_WINDOW + 1)
-        ]
-    )
-    cands = (
-        lw.select("doc_id", "title", F.explode(arms).alias("o"))
-        .select("doc_id", "title", "o.doc_b", "o.title_b")
-        .filter(F.col("doc_b").isNotNull())
-    )
-    scored = cands.select(
-        F.least("doc_id", "doc_b").alias("doc_a"),
-        F.greatest("doc_id", "doc_b").alias("doc_b"),
-        dl_distance(F.col("title"), F.col("title_b")).alias("dld"),
-    ).filter(F.col("dld") <= _DL_MAX)
-    return scored.orderBy("dld", "doc_a", "doc_b").limit(100)
-
-
-def _damerau_title_pairs_sql() -> str:
-    legs = ", ".join(
-        f"""LEAD(doc_id, {k}) OVER (PARTITION BY blk ORDER BY title, doc_id)
-                AS db{k},
-            LEAD(title, {k}) OVER (PARTITION BY blk ORDER BY title, doc_id)
-                AS tb{k}"""
-        for k in range(1, _JW_WINDOW + 1)
-    )
-    unp = " UNION ALL ".join(
-        f"SELECT doc_id, title, db{k} AS doc_b, tb{k} AS title_b FROM lw"
-        for k in range(1, _JW_WINDOW + 1)
-    )
-    return f"""
-        WITH t AS (SELECT doc_id, {_TITLE_SQL} AS title,
-                          substr({_TITLE_SQL}, 1, 2) AS blk
-                   FROM documents),
-        lw AS (SELECT doc_id, title, blk, {legs} FROM t),
-        c AS ({unp})
-        SELECT doc_a, doc_b, dld FROM (
-            SELECT LEAST(doc_id, doc_b) AS doc_a,
-                   GREATEST(doc_id, doc_b) AS doc_b,
-                   CAST(damerau_levenshtein(title, title_b) AS BIGINT) AS dld
-            FROM c WHERE doc_b IS NOT NULL)
-        WHERE dld <= {_DL_MAX}
-        ORDER BY dld, doc_a, doc_b LIMIT 100
-    """
-
-
-# ---------------------------------------------------------------------------
-# majority-rule cellular automaton (session 13)
-# ---------------------------------------------------------------------------
-
-_CA_RES = 5
-_CA_ROUNDS = 3
-
-
-def q_majority_automaton(spark, sf_dir):
-    """Iterated map algebra: 3 rounds of the majority-rule cellular
-    automaton on the res-5 document-occupancy grid — a cell is occupied
-    next round iff >= 5 of its 3x3 neighborhood (self included) are
-    occupied now. The morphological open/close smoother GIS stacks run
-    to denoise rasters, here as a pure relational fixpoint iteration.
-    All-integer; output per round: occupied count + cell-id checksum (mod 1000003 so the SUM stays in BIGINT).
-
-    Scale shape: each round is a literal 9-offset explode of the
-    O(occupied cells) set + one partial+final HAVING agg — the
-    candidate universe is occupied ∪ ring(occupied) by construction
-    (majority needs >= 5 occupied neighbors, so nothing outside the
-    ring can turn on). Points are touched once."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = (
-        d.select(cell_encode_col(lat, lng, _CA_RES).alias("cell"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nbrs = F.array(
-        *[kring_neighbor_col("cell", _CA_RES, dx, dy) for dx, dy in _offsets(1)]
-    )
-    out = []
-    for rnd in range(1, _CA_ROUNDS + 1):
-        occ = (
-            occ.select(F.explode(F.filter(nbrs, lambda c: c.isNotNull())).alias("cell"))
-            .groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") >= 5)
-            .select("cell")
-            .localCheckpoint(eager=True)
-        )
-        out.append(
-            occ.agg(
-                F.lit(rnd).alias("round"),
-                F.count(F.lit(1)).alias("n_occupied"),
-                F.coalesce(F.sum(F.col("cell") % F.lit(1000003)), F.lit(0)).alias("sum_cells"),
-            )
-        )
-    res = out[0]
-    for t in out[1:]:
-        res = res.unionByName(t)
-    return res.orderBy("round")
-
-
-def _majority_automaton_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _CA_RES)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _offsets(1))
-    steps = []
-    prev = "o0"
-    for rnd in range(1, _CA_ROUNDS + 1):
-        nbr = kring_neighbor_sql("o.cell", _CA_RES, "v.dx", "v.dy")
-        steps.append(
-            f"""o{rnd} AS MATERIALIZED (
-            SELECT nbr AS cell FROM (
-                SELECT {nbr} AS nbr
-                FROM {prev} o CROSS JOIN (VALUES {offs}) v(dx, dy)
-                WHERE {nbr} IS NOT NULL)
-            GROUP BY 1 HAVING COUNT(*) >= 5)"""
-        )
-        prev = f"o{rnd}"
-    chain = ",\n        ".join(steps)
-    sel = " UNION ALL ".join(
-        f"""SELECT {r} AS round, CAST(COUNT(*) AS BIGINT) AS n_occupied,
-                   CAST(COALESCE(SUM(cell % 1000003), 0) AS BIGINT) AS sum_cells
-            FROM o{r}"""
-        for r in range(1, _CA_ROUNDS + 1)
-    )
-    return f"""
-        WITH o0 AS MATERIALIZED (
-            SELECT DISTINCT {cell} AS cell FROM documents),
-        {chain}
-        SELECT * FROM ({sel}) ORDER BY round
-    """
-
-
-# ---------------------------------------------------------------------------
-# Poisson regression via IRLS (session 13)
-# ---------------------------------------------------------------------------
-
-_IRLS_ROUNDS = 3
-
-
-def q_poisson_irls(spark, sf_dir):
-    """Poisson regression (log link) of the daily event count on a linear
-    time trend, fit by 3 unrolled IRLS rounds — the count-GLM family
-    member `logreg_train` (Bernoulli) and `ridge_regression` (Gaussian)
-    don't cover. Each round: mu = exp(b0 + b1*x) pre-rounded 9 dp, working
-    response z = eta + (y-mu)/mu pre-rounded 9 dp, weighted-least-squares
-    2x2 closed form from per-term-9dp-rounded sums, betas re-rounded 9 dp
-    (the logreg/kmeans cross-engine protocol; model = O(1) driver
-    literals). Output: final (b0, b1), the daily growth rate exp(b1),
-    and n.
-
-    Scale shape: one partial+final agg over the points builds the O(days)
-    series; each round is ONE codegen agg over that tiny table."""
-    import math
-
-    days0 = (
-        _read(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").alias("d"))
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    mind = days0.select(F.min("d").alias("mind"))
-    days = (
-        days0.crossJoin(mind)
-        .select(F.datediff("d", "mind").cast("double").alias("x"), "y")
-        .localCheckpoint(eager=True)
-    )
-    n, sy = days.agg(F.count(F.lit(1)), F.sum("y")).collect()[0]
-    b0 = _round_half_up(math.log(sy / n), 9).item()
-    b1 = 0.0
-    for _ in range(_IRLS_ROUNDS):
-        eta = F.lit(b0) + F.lit(b1) * F.col("x")
-        mu = F.round(F.exp(eta), 9)
-        z = F.round(eta + (F.col("y") - mu) / mu, 9)
-        s = days.agg(
-            F.sum(F.round(mu, 9)).alias("sw"),
-            F.sum(F.round(mu * F.col("x"), 9)).alias("swx"),
-            F.sum(F.round(mu * F.col("x") * F.col("x"), 9)).alias("swxx"),
-            F.sum(F.round(mu * z, 9)).alias("swz"),
-            F.sum(F.round(mu * z * F.col("x"), 9)).alias("swxz"),
-        ).collect()[0]
-        det = s["sw"] * s["swxx"] - s["swx"] * s["swx"]
-        b0 = _round_half_up(
-            (s["swxx"] * s["swz"] - s["swx"] * s["swxz"]) / det, 9
-        ).item()
-        b1 = _round_half_up(
-            (s["sw"] * s["swxz"] - s["swx"] * s["swz"]) / det, 9
-        ).item()
-    return spark.createDataFrame(
-        [(int(n), float(b0), float(b1), float(_round_half_up(math.exp(b1), 6)))],
-        "n long, b0 double, b1 double, daily_growth double",
-    ).select("n", F.round("b0", 6).alias("b0"), F.round("b1", 6).alias("b1"), "daily_growth")
-
-
-def _poisson_irls_sql() -> str:
-    steps = ["b0 AS (SELECT ROUND(LN(CAST(SUM(y) AS DOUBLE) / COUNT(*)), 9) AS b0, 0.0 AS b1 FROM days)"]
-    prev = "b0"
-    for r in range(1, _IRLS_ROUNDS + 1):
-        steps.append(
-            f"""m{r} AS (
-            SELECT SUM(ROUND(mu, 9)) AS sw,
-                   SUM(ROUND(mu * x, 9)) AS swx,
-                   SUM(ROUND(mu * x * x, 9)) AS swxx,
-                   SUM(ROUND(mu * z, 9)) AS swz,
-                   SUM(ROUND(mu * z * x, 9)) AS swxz
-            FROM (SELECT x, y,
-                         ROUND(EXP(b.b0 + b.b1 * x), 9) AS mu,
-                         ROUND(b.b0 + b.b1 * x
-                               + (y - ROUND(EXP(b.b0 + b.b1 * x), 9))
-                                 / ROUND(EXP(b.b0 + b.b1 * x), 9), 9) AS z
-                  FROM days CROSS JOIN {prev} b)),
-        b{r} AS (
-            SELECT ROUND((swxx * swz - swx * swxz)
-                         / (sw * swxx - swx * swx), 9) AS b0,
-                   ROUND((sw * swxz - swx * swz)
-                         / (sw * swxx - swx * swx), 9) AS b1
-            FROM m{r})"""
-        )
-        prev = f"b{r}"
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH days AS MATERIALIZED (
-            SELECT CAST(date_diff('day',
-                       (SELECT MIN(date_trunc('day', ts)) FROM events),
-                       date_trunc('day', ts)) AS DOUBLE) AS x,
-                   CAST(COUNT(*) AS BIGINT) AS y
-            FROM events GROUP BY date_trunc('day', ts)),
-        {chain}
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM days) AS n,
-               ROUND(b0, 6) AS b0, ROUND(b1, 6) AS b1,
-               ROUND(EXP(b1), 6) AS daily_growth
-        FROM {prev}
-    """
-
-
-# ---------------------------------------------------------------------------
-# space-time DBSCAN (session 13)
-# ---------------------------------------------------------------------------
-
-_STDB_RES = 5
-_STDB_EPS_US = 10_800_000_000  # 3 hours
-_STDB_MINPTS = 3
-
-
-def _stdb_pair_stream(spark, sf_dir, pts=None):
-    """(pts, pairs) for ST-DBSCAN, LAZY (no checkpoint) so the plan-shape
-    pin (tests/test_plans.py::test_st_dbscan_join_is_bucketed_in_time) can
-    assert the (cell, time-bucket) join key before materialization. Pass a
-    checkpointed ``pts`` to rebind the pair plan onto it."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    if pts is None:
-        ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-        lat, lng = _latlng_cols(F.col("event_id"))
-        pts = ev.select(
-            "event_id",
-            cell_encode_col(lat, lng, _STDB_RES).alias("cell"),
-            F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-        ).withColumn("bkt", F.expr(f"t div {_STDB_EPS_US}"))
-    nbrs = F.array(
-        *[kring_neighbor_col("cell", _STDB_RES, dx, dy) for dx, dy in _offsets(1)]
-    )
-    ring = pts.select(
-        F.col("event_id").alias("a"),
-        F.col("t").alias("ta"),
-        F.col("bkt"),
-        F.explode(F.filter(nbrs, lambda c: c.isNotNull())).alias("nbr"),
-    ).select(
-        "a",
-        "ta",
-        "nbr",
-        F.explode(
-            F.array(F.col("bkt") - 1, F.col("bkt"), F.col("bkt") + 1)
-        ).alias("tbkt"),
-    )
-    pairs = ring.join(
-        pts.select(
-            F.col("cell").alias("nbr"),
-            F.col("bkt").alias("tbkt"),
-            F.col("event_id").alias("b"),
-            F.col("t").alias("tb"),
-        ),
-        ["nbr", "tbkt"],
-    ).filter(F.abs(F.col("ta") - F.col("tb")) <= _STDB_EPS_US).select("a", "b")
-    return pts, pairs
-
-
-def q_st_dbscan(spark, sf_dir):
-    """ST-DBSCAN (Birant & Kut 2007) over the event stream: the
-    spatiotemporal upgrade of `geo_dbscan` — neighborhood = same-or-
-    adjacent res-5 cell AND |Δt| <= 3 h, core points have >= 3 such
-    neighbors (self included), clusters are components of the core-core
-    graph, borders adopt the smallest core-neighbor label. Output: the
-    top-20 clusters by (core + border) size.
-
-    Scale shape (round-4 rework, 30.5 s -> 12.6 s measured at sf0.1):
-      * the ε-join is BUCKETED in BOTH dimensions — 9 ring-cell offsets ×
-        3 time-bucket offsets (bucket = t div ε, exact integer division),
-        ONE equi-join on (cell, bucket), then the |Δt| band filter. The
-        former cell-only join materialized every same-cell pair across the
-        whole month (~90 M intermediate rows at sf0.1 for 1.1 M surviving
-        pairs — measured); the bucket key bounds the join fan-in to
-        ±1 bucket, per qualifying pair still found exactly once (|Δt| ≤ ε
-        ⇒ bucket diff ≤ 1, and each (ring cell, bucket) target is distinct).
-      * TEMPORAL RUN CONTRACTION before component labeling: consecutive
-        core points in the SAME cell with gap ≤ ε are directly connected,
-        so each same-cell time-chain ("run", found with one lag window per
-        cell) contracts to a single node keyed by the run's MIN event_id.
-        The star loop (`dedup_components`) then runs on the run graph,
-        whose diameter is the SPATIAL one only — the month-long time chains
-        that forced 11 large/small-star rounds (measured) collapse to
-        ~5. Because every run key is the run's min event id, the star
-        loop's min-label output IS the component's min event id — labels
-        are bit-identical to the uncontracted computation, no relabel pass.
-    """
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.dedup import dedup_components
-
-    pts, pairs_lazy = _stdb_pair_stream(spark, sf_dir)
-    pts = pts.localCheckpoint(eager=True)
-    # rebind the lazy pair plan onto the checkpointed points
-    _, pairs_lazy = _stdb_pair_stream(spark, sf_dir, pts)
-    pairs = pairs_lazy.localCheckpoint(eager=True)
-    core = (
-        pairs.groupBy("a")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= _STDB_MINPTS)
-        .select(F.col("a").alias("id"))
-        .localCheckpoint(eager=True)
-    )
-    # temporal run contraction: same-cell core chains with gap <= eps
-    core_pts = pts.join(
-        core.withColumnRenamed("id", "event_id"), "event_id"
-    ).select("event_id", "cell", "t")
-    wseq = Window.partitionBy("cell").orderBy("t", "event_id")
-    gap_new = F.when(
-        F.lag("t").over(wseq).isNull()
-        | ((F.col("t") - F.lag("t").over(wseq)) > _STDB_EPS_US),
-        1,
-    ).otherwise(0)
-    runs = core_pts.withColumn(
-        "seq", F.sum(gap_new).over(wseq.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    run_map = runs.withColumn(
-        "run_key", F.min("event_id").over(Window.partitionBy("cell", "seq"))
-    ).select(F.col("event_id").alias("id"), "run_key").localCheckpoint(eager=True)
-    run_edges = (
-        pairs.filter(F.col("a") < F.col("b"))
-        .join(run_map.select(F.col("id").alias("a"), F.col("run_key").alias("ra")), "a")
-        .join(run_map.select(F.col("id").alias("b"), F.col("run_key").alias("rb")), "b")
-        .filter(F.col("ra") != F.col("rb"))
-        .select(F.col("ra").alias("doc_a"), F.col("rb").alias("doc_b"))
-    )
-    rcomp = dedup_components(run_edges)
-    core_lab = run_map.join(
-        rcomp.withColumnRenamed("id", "run_key"), "run_key", "left"
-    ).select("id", F.coalesce("comp", "run_key").alias("cluster"))
-    border_lab = (
-        pairs.filter(F.col("a") != F.col("b"))
-        .join(core_lab.withColumnRenamed("id", "b"), "b")
-        .join(core.withColumnRenamed("id", "a"), "a", "left_anti")
-        .groupBy("a")
-        .agg(F.min("cluster").alias("cluster"))
-    )
-    sizes = (
-        core_lab.groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n_core"))
-        .join(
-            border_lab.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_border")),
-            "cluster",
-            "left",
-        )
-        .select(
-            "cluster",
-            "n_core",
-            F.coalesce("n_border", F.lit(0)).alias("n_border"),
-        )
-    )
-    return sizes.orderBy(
-        F.desc(F.col("n_core") + F.col("n_border")), F.asc("cluster")
-    ).limit(20)
-
-
-def _st_dbscan_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _STDB_RES)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _offsets(1))
-    nbr = kring_neighbor_sql("p.cell", _STDB_RES, "v.dx", "v.dy")
-    return f"""
-        WITH RECURSIVE pts AS MATERIALIZED (
-            SELECT event_id, {cell} AS cell,
-                   epoch_us(CAST(ts AS TIMESTAMP)) AS t
-            FROM events),
-        ring AS (
-            SELECT p.event_id AS a, p.t AS ta, {nbr} AS nbr
-            FROM pts p CROSS JOIN (VALUES {offs}) v(dx, dy)
-            WHERE {nbr} IS NOT NULL),
-        pr AS MATERIALIZED (
-            SELECT r.a, q.event_id AS b
-            FROM ring r JOIN pts q ON q.cell = r.nbr
-            WHERE ABS(r.ta - q.t) <= {_STDB_EPS_US}),
-        core AS MATERIALIZED (
-            SELECT a AS id FROM pr GROUP BY 1
-            HAVING COUNT(*) >= {_STDB_MINPTS}),
-        ce AS MATERIALIZED (
-            SELECT a, b FROM pr
-            WHERE a < b
-              AND a IN (SELECT id FROM core)
-              AND b IN (SELECT id FROM core)),
-        sym AS (SELECT a, b FROM ce UNION ALL SELECT b, a FROM ce),
-        reach(id, r) AS (
-            SELECT a, a FROM sym
-            UNION
-            SELECT e.a, reach.r FROM sym e JOIN reach ON e.b = reach.id),
-        comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY id),
-        core_lab AS (SELECT c.id, COALESCE(m.comp, c.id) AS cluster
-                     FROM core c LEFT JOIN comp m ON m.id = c.id),
-        border_lab AS (
-            SELECT p.a AS id, MIN(cl.cluster) AS cluster
-            FROM pr p JOIN core_lab cl ON p.b = cl.id
-            WHERE p.a != p.b AND p.a NOT IN (SELECT id FROM core)
-            GROUP BY 1),
-        sizes AS (
-            SELECT c.cluster, CAST(COUNT(*) AS BIGINT) AS n_core,
-                   CAST(COALESCE(MAX(b.nb), 0) AS BIGINT) AS n_border
-            FROM core_lab c
-            LEFT JOIN (SELECT cluster, COUNT(*) AS nb
-                       FROM border_lab GROUP BY 1) b USING (cluster)
-            GROUP BY 1)
-        SELECT cluster, n_core, n_border FROM sizes
-        ORDER BY n_core + n_border DESC, cluster LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# James-Stein / empirical-Bayes rate shrinkage (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_james_stein(spark, sf_dir):
-    """Empirical-Bayes shrinkage of per-cell purchase rates toward the
-    global rate — the standard fix for small-cell rate instability in any
-    large-scale dashboard (the `wilson_ctr` ranking's estimation-side
-    sibling). Method-of-moments beta-binomial: prior strength
-    M = max(p(1-p)/s² - 1, 1) with s² the exposure-weighted variance of
-    cell rates; shrunk_i = (k_i + p·M)/(n_i + M). Integer (k, n) per
-    cell; the float tail uses the 9-dp pre-round SUM discipline and the
-    M/p scalars are computed once (1-row cross join). Output: top-20
-    cells by shrunk rate.
-
-    Scale shape: ONE partial+final agg over events to the O(cells)
-    table; everything after is cell-sized + two 1-row broadcasts."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cells = (
-        ev.groupBy(cell_encode_col(lat, lng, 4).alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias("k"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    tot = cells.agg(F.sum("n").alias("tn"), F.sum("k").alias("tk"))
-    p = F.col("tk") / F.col("tn")
-    sv = cells.crossJoin(tot).agg(
-        F.sum(
-            F.round(F.col("n") * F.pow(F.col("k") / F.col("n") - p, 2), 9)
-        ).alias("svar"),
-        F.max("tn").alias("tn"),
-        F.max("tk").alias("tk"),
-    )
-    m = sv.select(
-        "tn",
-        "tk",
-        F.round(
-            F.greatest(
-                (p * (F.lit(1.0) - p)) / (F.col("svar") / F.col("tn")) - F.lit(1.0),
-                F.lit(1.0),
-            ),
-            9,
-        ).alias("m"),
-        F.round(p, 9).alias("p"),
-    )
-    return (
-        cells.crossJoin(m)
-        .select(
-            "cell",
-            "n",
-            "k",
-            F.round(
-                (F.col("k") + F.col("p") * F.col("m"))
-                / (F.col("n") + F.col("m")),
-                6,
-            ).alias("shrunk_rate"),
-        )
-        .orderBy(F.desc("shrunk_rate"), F.asc("cell"))
-        .limit(20)
-    )
-
-
-def _james_stein_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH cells AS MATERIALIZED (
-            SELECT {cell} AS cell,
-                   CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS k
-            FROM events GROUP BY 1),
-        tot AS (SELECT CAST(SUM(n) AS BIGINT) AS tn,
-                       CAST(SUM(k) AS BIGINT) AS tk
-                FROM cells),
-        sv AS (SELECT SUM(ROUND(n * POW(CAST(k AS DOUBLE) / n
-                                        - CAST(tk AS DOUBLE) / tn, 2), 9)) AS svar,
-                      MAX(tn) AS tn, MAX(tk) AS tk
-               FROM cells CROSS JOIN tot),
-        prior AS (SELECT tn, tk,
-                         ROUND(GREATEST(
-                             (CAST(tk AS DOUBLE) / tn)
-                             * (1.0 - CAST(tk AS DOUBLE) / tn)
-                             / (svar / tn) - 1.0, 1.0), 9) AS m,
-                         ROUND(CAST(tk AS DOUBLE) / tn, 9) AS p
-                  FROM sv)
-        SELECT cell, n, k,
-               ROUND((k + p * m) / (n + m), 6) AS shrunk_rate
-        FROM cells CROSS JOIN prior
-        ORDER BY shrunk_rate DESC, cell LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# Atkinson inequality index (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_atkinson_index(spark, sf_dir):
-    """Atkinson inequality index (ε = 1) of the res-4 occupied-cell event
-    counts: A = 1 − geomean/mean — the welfare-theoretic member of the
-    inequality family (`cell_gini`, `theil_decomposition`). geomean via
-    SUM of 9-dp pre-rounded LN terms (the repo's float-SUM discipline);
-    the mean is an exact integer ratio. One partial+final agg end to end."""
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cells = ev.groupBy(cell_encode_col(lat, lng, 4).alias("cell")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    agg = cells.agg(
-        F.count(F.lit(1)).alias("n_cells"),
-        F.sum("x").alias("sx"),
-        F.sum(F.round(F.log("x"), 9)).alias("slnx"),
-    )
-    return agg.select(
-        "n_cells",
-        "sx",
-        F.round(
-            F.lit(1.0)
-            - F.exp(F.col("slnx") / F.col("n_cells"))
-            / (F.col("sx") / F.col("n_cells")),
-            6,
-        ).alias("atkinson"),
-    )
-
-
-def _atkinson_index_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH cells AS (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
-                       CAST(SUM(x) AS BIGINT) AS sx,
-                       SUM(ROUND(LN(x), 9)) AS slnx
-                FROM cells)
-        SELECT n_cells, sx,
-               ROUND(1.0 - EXP(slnx / n_cells)
-                     / (CAST(sx AS DOUBLE) / n_cells), 6) AS atkinson
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# Bradley-Terry pairwise-preference model (session 13)
-# ---------------------------------------------------------------------------
-
-_BT_ROUNDS = 3
-
-
-def q_bradley_terry(spark, sf_dir):
-    """Bradley-Terry preference strengths for the 5 event types, fit by 3
-    unrolled MM iterations (Hunter 2004): a 'contest' is a user-day where
-    type i occurs strictly more often than type j (ties dropped);
-    w_i ← W_i / Σ_j n_ij_total/(w_i + w_j), then normalized to sum to the
-    type count, 9-dp per round (the logreg/kmeans driver-literal
-    protocol). The ranking-model complement to `wilson_ctr` (independent
-    proportions) and `rbo_rankings` (rank agreement). Output: per type,
-    wins and final strength.
-
-    Scale shape: ONE (user, day, type) partial+final agg over events;
-    the contest matrix is 5×5 and every MM round is one agg over ≤20
-    rows with the weights as O(1) driver literals."""
-    ud = (
-        _read(spark, sf_dir, "events")
-        .groupBy(
-            "user_id",
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    pairs = (
-        ud.alias("a")
-        .join(
-            ud.alias("b"),
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.day") == F.col("b.day"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
-        .select(
-            F.col("a.event_type").alias("i"),
-            F.col("b.event_type").alias("j"),
-            F.when(F.col("a.c") > F.col("b.c"), 1).otherwise(0).alias("wi"),
-            F.when(F.col("b.c") > F.col("a.c"), 1).otherwise(0).alias("wj"),
-        )
-        .groupBy("i", "j")
-        .agg(F.sum("wi").alias("nij"), F.sum("wj").alias("nji"))
-        .filter((F.col("nij") + F.col("nji")) > 0)
-        .localCheckpoint(eager=True)
-    )
-    rows = pairs.collect()
-    types = sorted({r["i"] for r in rows} | {r["j"] for r in rows})
-    wins = {t: 0 for t in types}
-    tot = {}
-    for r in rows:
-        wins[r["i"]] += r["nij"]
-        wins[r["j"]] += r["nji"]
-        tot[(r["i"], r["j"])] = r["nij"] + r["nji"]
-    w = {t: 1.0 for t in types}
-    k = len(types)
-    for _ in range(_BT_ROUNDS):
-        nw = {}
-        for t in types:
-            den = sum(
-                tot[key] / (w[t] + w[o])
-                for key in tot
-                for o in ([key[1]] if key[0] == t else [key[0]] if key[1] == t else [])
-            )
-            nw[t] = wins[t] / den if den > 0 else w[t]
-        s = sum(nw.values())
-        w = {t: _round_half_up(nw[t] * k / s, 9).item() for t in types}
-    return spark.createDataFrame(
-        [(t, int(wins[t]), _round_half_up(w[t], 6).item()) for t in types],
-        "event_type string, wins long, strength double",
-    ).orderBy("event_type")
-
-
-def _bradley_terry_sql() -> str:
-    steps = []
-    prev = "w0"
-    for r in range(1, _BT_ROUNDS + 1):
-        steps.append(
-            f"""d{r} AS (
-            SELECT t.t,
-                   SUM(CAST(p.n AS DOUBLE)
-                       / (wt.w + wo.w)) AS den
-            FROM types t
-            JOIN pr p ON p.i = t.t OR p.j = t.t
-            JOIN {prev} wt ON wt.t = t.t
-            JOIN {prev} wo ON wo.t = CASE WHEN p.i = t.t THEN p.j ELSE p.i END
-            GROUP BY 1),
-        u{r} AS (
-            SELECT w.t, wi.wins / d.den AS nw
-            FROM d{r} d JOIN wins wi ON wi.t = d.t
-            JOIN {prev} w ON w.t = d.t),
-        w{r} AS (
-            SELECT t, ROUND(nw * (SELECT COUNT(*) FROM types)
-                            / (SELECT SUM(nw) FROM u{r}), 9) AS w
-            FROM u{r})"""
-        )
-        prev = f"w{r}"
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH ud AS (
-            SELECT user_id, strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                   event_type, COUNT(*) AS c
-            FROM events GROUP BY 1, 2, 3),
-        duels AS (
-            SELECT a.event_type AS i, b.event_type AS j,
-                   CAST(SUM(CASE WHEN a.c > b.c THEN 1 ELSE 0 END) AS BIGINT) AS nij,
-                   CAST(SUM(CASE WHEN b.c > a.c THEN 1 ELSE 0 END) AS BIGINT) AS nji
-            FROM ud a JOIN ud b
-              ON a.user_id = b.user_id AND a.day = b.day
-             AND a.event_type < b.event_type
-            GROUP BY 1, 2
-            HAVING SUM(CASE WHEN a.c > b.c THEN 1 ELSE 0 END)
-                 + SUM(CASE WHEN b.c > a.c THEN 1 ELSE 0 END) > 0),
-        pr AS MATERIALIZED (
-            SELECT i, j, nij + nji AS n FROM duels),
-        types AS (SELECT DISTINCT i AS t FROM duels
-                  UNION SELECT DISTINCT j FROM duels),
-        wins AS (
-            SELECT t, CAST(SUM(v) AS BIGINT) AS wins FROM (
-                SELECT i AS t, nij AS v FROM duels
-                UNION ALL SELECT j, nji FROM duels)
-            GROUP BY 1),
-        w0 AS (SELECT t, 1.0 AS w FROM types),
-        {chain}
-        SELECT w.t AS event_type, wi.wins, ROUND(w.w, 6) AS strength
-        FROM {prev} w JOIN wins wi ON wi.t = w.t
-        ORDER BY event_type
-    """
-
-
-# ---------------------------------------------------------------------------
-# spatial Markov transitions (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_spatial_markov(spark, sf_dir):
-    """Rey's spatial Markov chain (Rey 2001): daily res-3 cell activity
-    classes (0 = empty, 1 = at-or-below the global positive mean, 2 =
-    above), with day-to-day transitions CONDITIONED on the cell's
-    neighborhood context (its 8-ring lag class the same day) — does a
-    hot neighborhood pull a cell's class upward? The spatial-econometrics
-    upgrade of `cell_markov`. Every class boundary is an exact
-    cross-multiplied INTEGER comparison (x·N ≤ S, lag·N·ring ≤ ring_n·S)
-    — no float anywhere except the final count-ratio p.
-
-    Scale shape: one (cell, day) agg over the points, a dense-grid
-    fill via occupied-cells × distinct-days, the literal 8-offset ring
-    join, and one (cell-day)-sized lead window — all O(cells × days)
-    after the first agg."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cnt = (
-        ev.groupBy(
-            cell_encode_col(lat, lng, 3).alias("cell"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-        )
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    cells = cnt.select("cell").distinct()
-    days = cnt.select("day").distinct()
-    grid = (
-        cells.crossJoin(days)
-        .join(cnt, ["cell", "day"], "left")
-        .select("cell", "day", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    tot = grid.agg(
-        F.count(F.lit(1)).alias("nn"), F.sum("x").alias("ss")
-    )
-    ring = [o for o in _offsets(1) if o != (0, 0)]
-    nbrs = F.array(
-        *[kring_neighbor_col("cell", 3, dx, dy) for dx, dy in ring]
-    )
-    lagged = (
-        grid.select(
-            "cell",
-            "day",
-            F.explode(F.filter(nbrs, lambda c: c.isNotNull())).alias("nbr"),
-        )
-        .join(
-            grid.select(
-                F.col("cell").alias("nbr"),
-                F.col("day").alias("day"),
-                F.col("x").alias("nx"),
-            ),
-            ["nbr", "day"],
-            "left",
-        )
-        .groupBy("cell", "day")
-        .agg(
-            F.count(F.lit(1)).alias("ring_n"),
-            F.sum(F.coalesce("nx", F.lit(0))).alias("lag_sum"),
-        )
-    )
-    st = (
-        grid.join(lagged, ["cell", "day"])
-        .crossJoin(tot)
-        .select(
-            "cell",
-            "day",
-            F.when(F.col("x") == 0, 0)
-            .when(F.col("x") * F.col("nn") <= F.col("ss"), 1)
-            .otherwise(2)
-            .alias("cls"),
-            F.when(F.col("lag_sum") == 0, 0)
-            .when(
-                F.col("lag_sum") * F.col("nn") <= F.col("ring_n") * F.col("ss"), 1
-            )
-            .otherwise(2)
-            .alias("lag_cls"),
-        )
-    )
-    w = Window.partitionBy("cell").orderBy("day")
-    trans = (
-        st.withColumn("nxt", F.lead("cls").over(w))
-        .filter(F.col("nxt").isNotNull())
-        .groupBy("lag_cls", F.col("cls").alias("from_cls"), F.col("nxt").alias("to_cls"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tot2 = trans.groupBy("lag_cls", "from_cls").agg(F.sum("n").alias("nf"))
-    return (
-        trans.join(tot2, ["lag_cls", "from_cls"])
-        .select(
-            "lag_cls",
-            "from_cls",
-            "to_cls",
-            "n",
-            F.round(F.col("n") / F.col("nf").cast("double"), 6).alias("p"),
-        )
-        .orderBy("lag_cls", "from_cls", "to_cls")
-    )
-
-
-def _spatial_markov_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    ring = [o for o in _offsets(1) if o != (0, 0)]
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in ring)
-    nbr = kring_neighbor_sql("g.cell", 3, "v.dx", "v.dy")
-    return f"""
-        WITH cnt AS MATERIALIZED (
-            SELECT {cell} AS cell,
-                   strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-        grid AS MATERIALIZED (
-            SELECT c.cell, d.day, COALESCE(n.x, 0) AS x
-            FROM (SELECT DISTINCT cell FROM cnt) c
-            CROSS JOIN (SELECT DISTINCT day FROM cnt) d
-            LEFT JOIN cnt n ON n.cell = c.cell AND n.day = d.day),
-        tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS nn,
-                       CAST(SUM(x) AS BIGINT) AS ss
-                FROM grid),
-        lagged AS (
-            SELECT r.cell, r.day,
-                   CAST(COUNT(*) AS BIGINT) AS ring_n,
-                   CAST(SUM(COALESCE(q.x, 0)) AS BIGINT) AS lag_sum
-            FROM (SELECT g.cell, g.day, {nbr} AS nbr
-                  FROM grid g CROSS JOIN (VALUES {offs}) v(dx, dy)
-                  WHERE {nbr} IS NOT NULL) r
-            LEFT JOIN grid q ON q.cell = r.nbr AND q.day = r.day
-            GROUP BY 1, 2),
-        st AS (
-            SELECT g.cell, g.day,
-                   CASE WHEN g.x = 0 THEN 0
-                        WHEN g.x * t.nn <= t.ss THEN 1
-                        ELSE 2 END AS cls,
-                   CASE WHEN l.lag_sum = 0 THEN 0
-                        WHEN l.lag_sum * t.nn <= l.ring_n * t.ss THEN 1
-                        ELSE 2 END AS lag_cls
-            FROM grid g
-            JOIN lagged l ON l.cell = g.cell AND l.day = g.day
-            CROSS JOIN tot t),
-        tr AS (
-            SELECT lag_cls, cls AS from_cls, nxt AS to_cls,
-                   CAST(COUNT(*) AS BIGINT) AS n
-            FROM (SELECT lag_cls, cls,
-                         LEAD(cls) OVER (PARTITION BY cell ORDER BY day) AS nxt
-                  FROM st)
-            WHERE nxt IS NOT NULL
-            GROUP BY 1, 2, 3)
-        SELECT lag_cls, from_cls, to_cls, n,
-               ROUND(CAST(n AS DOUBLE)
-                     / SUM(n) OVER (PARTITION BY lag_cls, from_cls), 6) AS p
-        FROM tr
-        ORDER BY lag_cls, from_cls, to_cls
-    """
-
-
-# ---------------------------------------------------------------------------
-# Hough line detection (session 13)
-# ---------------------------------------------------------------------------
-
-_HOUGH_ANGLES = 8
-_HOUGH_BIN = 4.0
-
-
-def _hough_terms() -> list[tuple[int, float, float]]:
-    import math
-
-    out = []
-    for k in range(_HOUGH_ANGLES):
-        th = math.pi * k / _HOUGH_ANGLES
-        out.append((k, round(math.cos(th), 6), round(math.sin(th), 6)))
-    return out
-
-
-def q_hough_lines(spark, sf_dir):
-    """Hough-transform line detection on the res-6 document occupancy
-    raster: every occupied cell votes for (θ, ρ) with θ over 8 quantized
-    angles (cos/sin as pinned 6-dp literals — SHARED text with the
-    oracle) and ρ binned by FLOOR((x·cosθ + y·sinθ)/4) — the classic
-    raster→vector structure detector (roads/faults/scanlines) beside
-    marching-squares contours. Top-10 accumulator peaks; votes are exact
-    integers.
-
-    Scale shape: one point shuffle to the O(occupied) cell set, a
-    literal 8-angle explode, one partial+final vote agg."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    n = 64
-    x = F.least(
-        F.greatest(F.floor((lng + 180.0) / 360.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    y = F.least(
-        F.greatest(F.floor((lat + 90.0) / 180.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    cells = d.select(x.alias("x"), y.alias("y")).distinct()
-    arms = F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("theta"),
-                F.floor(
-                    (F.col("x") * F.lit(c) + F.col("y") * F.lit(s)) / F.lit(_HOUGH_BIN)
-                )
-                .cast("long")
-                .alias("rho"),
-            )
-            for k, c, s in _hough_terms()
-        ]
-    )
-    return (
-        cells.select(F.explode(arms).alias("o"))
-        .select("o.theta", "o.rho")
-        .groupBy("theta", "rho")
-        .agg(F.count(F.lit(1)).alias("votes"))
-        .orderBy(F.desc("votes"), "theta", "rho")
-        .limit(10)
-    )
-
-
-def _hough_lines_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    n = 64
-    x = f"LEAST(GREATEST(CAST(FLOOR(({lng} + 180.0) / 360.0 * {n}) AS BIGINT), 0), {n - 1})"
-    y = f"LEAST(GREATEST(CAST(FLOOR(({lat} + 90.0) / 180.0 * {n}) AS BIGINT), 0), {n - 1})"
-    legs = " UNION ALL ".join(
-        f"SELECT {k} AS theta, CAST(FLOOR((x * {c!r} + y * {s!r}) / {_HOUGH_BIN!r}) AS BIGINT) AS rho FROM cells"
-        for k, c, s in _hough_terms()
-    )
-    return f"""
-        WITH cells AS (SELECT DISTINCT {x} AS x, {y} AS y FROM documents),
-        votes AS ({legs})
-        SELECT theta, rho, CAST(COUNT(*) AS BIGINT) AS votes
-        FROM votes GROUP BY 1, 2
-        ORDER BY votes DESC, theta, rho LIMIT 10
-    """
-
-
-# ---------------------------------------------------------------------------
-# association rules (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_apriori_rules(spark, sf_dir):
-    """Association rules over user-day baskets of event types — the
-    market-basket family (support / confidence / lift) the repo's
-    co-occurrence ops (`cell_covisit`, `pmi_bigrams`) don't express as
-    RULES. Baskets are (user, day) presence sets; for every ordered type
-    pair i→j: support = supp(ij)/N, confidence = supp(ij)/supp(i),
-    lift = conf·N/supp(j) — all exact integer ratios rounded 6 dp.
-    Top-20 rules by confidence.
-
-    Scale shape: ONE (user, day, type) distinct agg over events, a
-    keyed basket self-join on (user, day) for pair supports (bounded:
-    ≤ k²=25 pairs per basket), two broadcast item-support joins."""
-    b = (
-        _read(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-            "event_type",
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nb = b.select("user_id", "day").distinct().count()
-    item = b.groupBy(F.col("event_type").alias("t")).agg(
-        F.count(F.lit(1)).alias("supp_t")
-    )
-    pair = (
-        b.alias("a")
-        .join(
-            b.alias("c"),
-            (F.col("a.user_id") == F.col("c.user_id"))
-            & (F.col("a.day") == F.col("c.day"))
-            & (F.col("a.event_type") != F.col("c.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("ante"),
-            F.col("c.event_type").alias("cons"),
-        )
-        .agg(F.count(F.lit(1)).alias("supp_pair"))
-    )
-    return (
-        pair.join(item.select(F.col("t").alias("ante"), F.col("supp_t").alias("sa")), "ante")
-        .join(item.select(F.col("t").alias("cons"), F.col("supp_t").alias("sc")), "cons")
-        .select(
-            "ante",
-            "cons",
-            "supp_pair",
-            F.round(F.col("supp_pair") / F.lit(float(nb)), 6).alias("support"),
-            F.round(F.col("supp_pair") / F.col("sa").cast("double"), 6).alias(
-                "confidence"
-            ),
-            F.round(
-                F.col("supp_pair") * F.lit(float(nb))
-                / (F.col("sa") * F.col("sc")).cast("double"),
-                6,
-            ).alias("lift"),
-        )
-        .orderBy(F.desc("confidence"), "ante", "cons")
-        .limit(20)
-    )
-
-
-def _apriori_rules_sql() -> str:
-    return """
-        WITH b AS MATERIALIZED (
-            SELECT DISTINCT user_id,
-                   strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                   event_type
-            FROM events),
-        nb AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n
-               FROM (SELECT DISTINCT user_id, day FROM b)),
-        item AS (SELECT event_type AS t, CAST(COUNT(*) AS BIGINT) AS supp_t
-                 FROM b GROUP BY 1),
-        pair AS (
-            SELECT a.event_type AS ante, c.event_type AS cons,
-                   CAST(COUNT(*) AS BIGINT) AS supp_pair
-            FROM b a JOIN b c
-              ON a.user_id = c.user_id AND a.day = c.day
-             AND a.event_type != c.event_type
-            GROUP BY 1, 2)
-        SELECT ante, cons, supp_pair,
-               ROUND(supp_pair / nb.n, 6) AS support,
-               ROUND(supp_pair / CAST(ia.supp_t AS DOUBLE), 6) AS confidence,
-               ROUND(supp_pair * nb.n
-                     / CAST(ia.supp_t * ic.supp_t AS DOUBLE), 6) AS lift
-        FROM pair
-        JOIN item ia ON ia.t = ante
-        JOIN item ic ON ic.t = cons
-        CROSS JOIN nb
-        ORDER BY confidence DESC, ante, cons LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# Tukey median polish (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_median_polish(spark, sf_dir):
-    """Tukey two-way median polish of the (day-of-week × week) event-count
-    matrix, 2 full sweeps: alternately remove row (dow) and column (week)
-    medians, accumulating effects — the robust additive decomposition
-    under seasonal outliers (vs mean-based `stl_lite`). Medians are exact
-    interpolated order statistics of integers (halves, then quarters —
-    exact binary fractions, ZERO float drift); output the accumulated dow
-    and week effects.
-
-    Scale shape: one partial+final agg over the points to the 7×5 matrix;
-    each sweep is two grouped exact-median aggs + a broadcast join on that
-    constant-size table."""
-    ev = _read(spark, sf_dir, "events").select("ts")
-    days0 = ev.groupBy(F.date_trunc("day", "ts").alias("d")).agg(
-        F.count(F.lit(1)).alias("y")
-    )
-    mind = days0.select(F.min("d").alias("mind"))
-    m = (
-        days0.crossJoin(mind)
-        .select(
-            F.dayofweek("d").alias("dow"),
-            F.floor(F.datediff("d", "mind") / 7).cast("long").alias("week"),
-            F.col("y").cast("double").alias("r"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    row_eff = None
-    col_eff = None
-    for _ in range(2):
-        rm = m.groupBy("dow").agg(F.median("r").alias("rm"))
-        row_eff = (
-            rm.select("dow", F.col("rm").alias("eff"))
-            if row_eff is None
-            else row_eff.join(rm, "dow").select(
-                "dow", (F.col("eff") + F.col("rm")).alias("eff")
-            )
-        )
-        m = m.join(rm, "dow").select(
-            "dow", "week", (F.col("r") - F.col("rm")).alias("r")
-        )
-        cm = m.groupBy("week").agg(F.median("r").alias("cm"))
-        col_eff = (
-            cm.select("week", F.col("cm").alias("eff"))
-            if col_eff is None
-            else col_eff.join(cm, "week").select(
-                "week", (F.col("eff") + F.col("cm")).alias("eff")
-            )
-        )
-        m = m.join(cm, "week").select(
-            "dow", "week", (F.col("r") - F.col("cm")).alias("r")
-        ).localCheckpoint(eager=True)
-    rows = row_eff.select(
-        F.lit("dow").alias("kind"), F.col("dow").cast("long").alias("key"),
-        F.round("eff", 6).alias("effect"),
-    )
-    cols = col_eff.select(
-        F.lit("week").alias("kind"), F.col("week").alias("key"),
-        F.round("eff", 6).alias("effect"),
-    )
-    return rows.unionByName(cols).orderBy("kind", "key")
-
-
-def _median_polish_sql() -> str:
-    steps = []
-    prev = "m0"
-    re_prev, ce_prev = None, None
-    for s in range(1, 3):
-        re_cur, ce_cur = f"re{s}", f"ce{s}"
-        re_expr = (
-            f"SELECT dow, MEDIAN(r) AS rm FROM {prev} GROUP BY 1"
-        )
-        steps.append(f"rm{s} AS ({re_expr})")
-        steps.append(
-            f"{re_cur} AS (SELECT rm{s}.dow, "
-            + (f"re{s - 1}.eff + rm{s}.rm AS eff FROM rm{s} JOIN re{s - 1} USING (dow))"
-               if re_prev else f"rm{s}.rm AS eff FROM rm{s})")
-        )
-        steps.append(
-            f"mr{s} AS (SELECT m.dow, m.week, m.r - rm{s}.rm AS r "
-            f"FROM {prev} m JOIN rm{s} USING (dow))"
-        )
-        steps.append(f"cm{s} AS (SELECT week, MEDIAN(r) AS cm FROM mr{s} GROUP BY 1)")
-        steps.append(
-            f"{ce_cur} AS (SELECT cm{s}.week, "
-            + (f"ce{s - 1}.eff + cm{s}.cm AS eff FROM cm{s} JOIN ce{s - 1} USING (week))"
-               if ce_prev else f"cm{s}.cm AS eff FROM cm{s})")
-        )
-        steps.append(
-            f"m{s} AS (SELECT m.dow, m.week, m.r - cm{s}.cm AS r "
-            f"FROM mr{s} m JOIN cm{s} USING (week))"
-        )
-        prev = f"m{s}"
-        re_prev, ce_prev = re_cur, ce_cur
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH days AS (
-            SELECT date_trunc('day', ts) AS d, CAST(COUNT(*) AS BIGINT) AS y
-            FROM events GROUP BY 1),
-        m0 AS MATERIALIZED (
-            SELECT CAST(dayofweek(d) + 1 AS BIGINT) AS dow,
-                   CAST(FLOOR(date_diff('day',
-                        (SELECT MIN(d) FROM days), d) / 7) AS BIGINT) AS week,
-                   CAST(y AS DOUBLE) AS r
-            FROM days),
-        {chain}
-        SELECT 'dow' AS kind, dow AS key, ROUND(eff, 6) AS effect FROM {re_prev}
-        UNION ALL
-        SELECT 'week', week, ROUND(eff, 6) FROM {ce_prev}
-        ORDER BY kind, key
-    """
-
-
-# ---------------------------------------------------------------------------
-# space-filling-curve locality audit (session 13)
-# ---------------------------------------------------------------------------
-
-_CURVE_GAP = 8
-
-
-def q_curve_locality_audit(spark, sf_dir):
-    """Z-order vs Hilbert locality audit for RING reads: for every occupied
-    res-5 cell, map its occupied 3×3 ring to both curve indices and count
-    the SEEKS a curve-sorted file layout needs to serve that ring (a seek
-    = sorted-index gap > 8) plus the index span — the measured WHY behind
-    choosing Hilbert for `zorder_layout`-style OPTIMIZE writes (Hilbert
-    has no Morton seam jumps, so fewer seeks per ring). All-integer
-    counts; spans averaged as exact ratios.
-
-    Scale shape: one point agg to the O(occupied) set, the literal
-    9-offset ring join, then two (center)-partitioned sort windows over
-    the O(ring pairs) table — both curve encodes are flat codegen
-    projections."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.hilbert import hilbert_withcolumns
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    res, n = 5, 32
-    occ = (
-        d.select(cell_encode_col(lat, lng, res).alias("cell"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    rem = F.col("cell") - F.lit(res * RES_MULTIPLIER)
-    y = F.floor(rem / F.lit(n)).cast("long")
-    x = (rem - y * F.lit(n)).cast("long")
-    idx = hilbert_withcolumns(
-        occ.select("cell", x.alias("x"), y.alias("y")), 5
-    ).withColumn("zi", F.expr(_morton_sql("x", "y", 5)))
-    nbrs = F.array(
-        *[kring_neighbor_col("cell", res, dx, dy) for dx, dy in _offsets(1)]
-    )
-    ring = occ.select(
-        F.col("cell").alias("center"),
-        F.explode(F.filter(nbrs, lambda c: c.isNotNull())).alias("cell"),
-    ).join(idx.select("cell", "zi", F.col("hd").alias("hi")), "cell")
-    out = []
-    for curve, col in (("hilbert", "hi"), ("zorder", "zi")):
-        w = Window.partitionBy("center").orderBy(col)
-        per = (
-            ring.select("center", F.col(col).alias("i"))
-            .withColumn("gap", F.col("i") - F.lag("i").over(Window.partitionBy("center").orderBy("i")))
-            .groupBy("center")
-            .agg(
-                (
-                    F.lit(1)
-                    + F.sum(
-                        F.when(F.col("gap") > _CURVE_GAP, 1).otherwise(0)
-                    )
-                ).alias("seeks"),
-                (F.max("i") - F.min("i")).alias("span"),
-            )
-        )
-        out.append(
-            per.agg(
-                F.lit(curve).alias("curve"),
-                F.count(F.lit(1)).alias("n_centers"),
-                F.sum("seeks").alias("total_seeks"),
-                F.round(F.sum("span") / F.count(F.lit(1)), 6).alias("avg_span"),
-            )
-        )
-    return out[0].unionByName(out[1]).orderBy("curve")
-
-
-def _curve_locality_audit_sql() -> str:
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-    from raptor_service_spark.geo.hilbert import hilbert_sql_chain
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("doc_id")
-    res, n = 5, 32
-    cell = cell_encode_sql(lat, lng, res)
-    rem = f"(cell - {res * RES_MULTIPLIER})"
-    ysql = f"CAST(FLOOR({rem} / {n}) AS BIGINT)"
-    xsql = f"({rem} - {ysql} * {n})"
-    hchain = hilbert_sql_chain(5, "(SELECT cell, x, y FROM xy)")
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _offsets(1))
-    nbr = kring_neighbor_sql("o.cell", res, "v.dx", "v.dy")
-    z = _morton_sql("x", "y", 5)
-    legs = []
-    for curve, col in (("hilbert", "hi"), ("zorder", "zi")):
-        legs.append(
-            f"""SELECT '{curve}' AS curve,
-                   CAST(COUNT(*) AS BIGINT) AS n_centers,
-                   CAST(SUM(seeks) AS BIGINT) AS total_seeks,
-                   ROUND(SUM(span) / CAST(COUNT(*) AS DOUBLE), 6) AS avg_span
-            FROM (SELECT center,
-                         1 + SUM(CASE WHEN gap > {_CURVE_GAP} THEN 1 ELSE 0 END) AS seeks,
-                         MAX(i) - MIN(i) AS span
-                  FROM (SELECT center, {col} AS i,
-                               {col} - LAG({col}) OVER (PARTITION BY center
-                                                        ORDER BY {col}) AS gap
-                        FROM ring)
-                  GROUP BY center)"""
-        )
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH occ AS MATERIALIZED (
-            SELECT DISTINCT {cell} AS cell FROM documents),
-        xy AS (SELECT cell, {xsql} AS x, {ysql} AS y FROM occ),
-        {hchain},
-        idx AS MATERIALIZED (
-            SELECT cell, hd AS hi, {z} AS zi FROM h),
-        ring AS MATERIALIZED (
-            SELECT o.cell AS center, i.zi, i.hi
-            FROM occ o CROSS JOIN (VALUES {offs}) v(dx, dy)
-            JOIN idx i ON i.cell = {nbr})
-        SELECT * FROM ({union}) ORDER BY curve
-    """
-
-
-# ---------------------------------------------------------------------------
-# Cox proportional hazards (session 13)
-# ---------------------------------------------------------------------------
-
-_COX_ROUNDS = 2
-
-
-def _cox_risk_table(spark, sf_dir):
-    """Per-user survival row: time-to-first-purchase (days, 1-based) from
-    the user's first event, censored at their last observed day; binary
-    covariate x = user_id % 2. Returns the per-distinct-time risk table
-    (d0, d1 events and n0, n1 at-risk counts per group) — all exact
-    integers via suffix-cumulative windows."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    per = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", "ts")).alias("first_d"),
-        F.max(F.date_trunc("day", "ts")).alias("last_d"),
-        F.min(
-            F.when(
-                F.col("event_type") == "purchase", F.date_trunc("day", "ts")
-            )
-        ).alias("p_d"),
-    )
-    subj = per.select(
-        (F.col("user_id") % 2).alias("x"),
-        F.when(F.col("p_d").isNotNull(), 1).otherwise(0).alias("delta"),
-        (
-            F.datediff(F.coalesce("p_d", "last_d"), "first_d") + F.lit(1)
-        ).cast("long").alias("t"),
-    )
-    grp = subj.groupBy("t").agg(
-        F.sum(F.when((F.col("delta") == 1) & (F.col("x") == 0), 1).otherwise(0)).alias("d0"),
-        F.sum(F.when((F.col("delta") == 1) & (F.col("x") == 1), 1).otherwise(0)).alias("d1"),
-        F.sum(F.when(F.col("x") == 0, 1).otherwise(0)).alias("c0"),
-        F.sum(F.when(F.col("x") == 1, 1).otherwise(0)).alias("c1"),
-    )
-    w = Window.orderBy(F.desc("t")).rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        grp.select(
-            "t",
-            "d0",
-            "d1",
-            F.sum("c0").over(w).alias("n0"),
-            F.sum("c1").over(w).alias("n1"),
-        )
-        .filter((F.col("d0") + F.col("d1")) > 0)
-        .localCheckpoint(eager=True)
-    )
-
-
-def q_cox_ph(spark, sf_dir):
-    """Cox proportional-hazards regression (binary covariate, Breslow
-    ties) of time-to-first-purchase — the survival-REGRESSION member the
-    nonparametric `kaplan_meier` curve doesn't cover. With x ∈ {0,1} the
-    partial-likelihood score collapses to exact risk-set counts:
-    S0 = n0 + n1·e^β, U = Σ_t [d1_t − d_t·n1 e^β/S0], I = Σ_t d_t·
-    n0 n1 e^β/S0² — all from suffix-cumulative integer windows; 2 Newton
-    rounds, β 9-dp per round (driver-literal protocol). Output: β, the
-    hazard ratio e^β, and the event counts.
-
-    Scale shape: one user agg over the points, one O(distinct times)
-    suffix window, then two 1-row aggs."""
-    import math
-
-    risk = _cox_risk_table(spark, sf_dir)
-    beta = 0.0
-    for _ in range(_COX_ROUNDS):
-        eb = F.lit(_round_half_up(math.exp(beta), 9).item())
-        s0 = F.col("n0") + F.col("n1") * eb
-        d = F.col("d0") + F.col("d1")
-        u_i = risk.agg(
-            F.sum(
-                F.round(F.col("d1") - d * F.col("n1") * eb / s0, 9)
-            ).alias("u"),
-            F.sum(
-                F.round(d * F.col("n0") * F.col("n1") * eb / (s0 * s0), 9)
-            ).alias("i"),
-        ).collect()[0]
-        beta = _round_half_up(beta + u_i["u"] / u_i["i"], 9).item()
-    tot = risk.agg(
-        F.sum("d0").alias("e0"), F.sum("d1").alias("e1")
-    ).collect()[0]
-    return spark.createDataFrame(
-        [
-            (
-                int(tot["e0"]),
-                int(tot["e1"]),
-                float(_round_half_up(beta, 6)),
-                float(_round_half_up(math.exp(beta), 6)),
-            )
-        ],
-        "events_g0 long, events_g1 long, beta double, hazard_ratio double",
-    )
-
-
-def _cox_ph_sql() -> str:
-    risk = """
-        per AS (
-            SELECT user_id,
-                   MIN(date_trunc('day', ts)) AS first_d,
-                   MAX(date_trunc('day', ts)) AS last_d,
-                   MIN(CASE WHEN event_type = 'purchase'
-                            THEN date_trunc('day', ts) END) AS p_d
-            FROM events GROUP BY 1),
-        subj AS (
-            SELECT user_id % 2 AS x,
-                   CASE WHEN p_d IS NOT NULL THEN 1 ELSE 0 END AS delta,
-                   CAST(date_diff('day', first_d, COALESCE(p_d, last_d)) + 1
-                        AS BIGINT) AS t
-            FROM per),
-        grp AS (
-            SELECT t,
-                   CAST(SUM(CASE WHEN delta = 1 AND x = 0 THEN 1 ELSE 0 END) AS BIGINT) AS d0,
-                   CAST(SUM(CASE WHEN delta = 1 AND x = 1 THEN 1 ELSE 0 END) AS BIGINT) AS d1,
-                   CAST(SUM(CASE WHEN x = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
-                   CAST(SUM(CASE WHEN x = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1
-            FROM subj GROUP BY 1),
-        risk AS MATERIALIZED (
-            SELECT t, d0, d1,
-                   SUM(c0) OVER (ORDER BY t DESC
-                                 ROWS UNBOUNDED PRECEDING) AS n0,
-                   SUM(c1) OVER (ORDER BY t DESC
-                                 ROWS UNBOUNDED PRECEDING) AS n1
-            FROM grp
-            QUALIFY d0 + d1 > 0)"""
-    steps = ["b0 AS (SELECT 0.0 AS beta)"]
-    prev = "b0"
-    for r in range(1, _COX_ROUNDS + 1):
-        steps.append(
-            f"""s{r} AS (
-            SELECT b.beta,
-                   SUM(ROUND(d1 - (d0 + d1) * n1 * ROUND(EXP(b.beta), 9)
-                             / (n0 + n1 * ROUND(EXP(b.beta), 9)), 9)) AS u,
-                   SUM(ROUND((d0 + d1) * n0 * n1 * ROUND(EXP(b.beta), 9)
-                             / POW(n0 + n1 * ROUND(EXP(b.beta), 9), 2), 9)) AS i
-            FROM risk CROSS JOIN {prev} b
-            GROUP BY b.beta),
-        b{r} AS (SELECT ROUND(beta + u / i, 9) AS beta FROM s{r})"""
-        )
-        prev = f"b{r}"
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH {risk},
-        {chain}
-        SELECT (SELECT CAST(SUM(d0) AS BIGINT) FROM risk) AS events_g0,
-               (SELECT CAST(SUM(d1) AS BIGINT) FROM risk) AS events_g1,
-               ROUND(beta, 6) AS beta,
-               ROUND(EXP(beta), 6) AS hazard_ratio
-        FROM {prev}
-    """
-
-
-# ---------------------------------------------------------------------------
-# Markov surprise (trajectory anomaly) (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_markov_surprise(spark, sf_dir):
-    """Trajectory anomaly ranking by Markov surprise: train the res-3
-    next-cell transition matrix on ALL movements (self-loops included —
-    a proper probability model, unlike `cell_markov`'s display table),
-    then score every user by the average negative log-likelihood of
-    their OWN transitions — users whose movement the population model
-    least explains (Σ −ln p per step / steps). The composition anomaly
-    detector on top of the existing OD machinery. ln runs on exact
-    count ratios only, each step 9-dp pre-rounded. Top-20 users.
-
-    Scale shape: ONE user-ordered window over the points shared by
-    training and scoring; the model join is on the O(cell-pair) count
-    table."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    steps = (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(F.col("prev_cell").isNotNull())
-        .select("user_id", F.col("prev_cell").alias("a"), F.col("cell").alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    trans = steps.groupBy("a", "b").agg(F.count(F.lit(1)).alias("nab"))
-    outc = trans.groupBy("a").agg(F.sum("nab").alias("na"))
-    model = trans.join(outc, "a").select(
-        "a",
-        "b",
-        F.round(-F.log(F.col("nab") / F.col("na").cast("double")), 9).alias(
-            "nll"
-        ),
-    )
-    return (
-        steps.join(model, ["a", "b"])
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_steps"),
-            F.round(F.sum("nll") / F.count(F.lit(1)), 6).alias("surprise"),
-        )
-        .orderBy(F.desc("surprise"), "user_id")
-        .limit(20)
-    )
-
-
-def _markov_surprise_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH steps AS MATERIALIZED (
-            SELECT user_id, prev_cell AS a, cell AS b
-            FROM (SELECT user_id, cell,
-                         LAG(cell) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS prev_cell
-                  FROM (SELECT user_id, ts, event_id, {cell} AS cell
-                        FROM events))
-            WHERE prev_cell IS NOT NULL),
-        trans AS (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS nab
-                  FROM steps GROUP BY 1, 2),
-        outc AS (SELECT a, CAST(SUM(nab) AS BIGINT) AS na
-                 FROM trans GROUP BY 1),
-        model AS (SELECT t.a, t.b,
-                         ROUND(-LN(CAST(t.nab AS DOUBLE) / o.na), 9) AS nll
-                  FROM trans t JOIN outc o USING (a))
-        SELECT s.user_id,
-               CAST(COUNT(*) AS BIGINT) AS n_steps,
-               ROUND(SUM(m.nll) / COUNT(*), 6) AS surprise
-        FROM steps s JOIN model m ON s.a = m.a AND s.b = m.b
-        GROUP BY 1
-        ORDER BY surprise DESC, user_id LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# rank aggregation: Borda + Condorcet audit (session 13)
-# ---------------------------------------------------------------------------
-
-_RA_K = 10
-
-
-def q_rank_aggregation(spark, sf_dir):
-    """Social-choice rank aggregation over three heterogeneous document
-    rankers — BM25 (the fixed query), doc length, quality score — the
-    voting-theoretic alternative to score fusion (`hybrid_retrieval` RRF,
-    `dbsf_fusion` z-scores): Borda points (k − rank, absent = 0) summed
-    across rankers pick the top-4; a pairwise-majority audit then counts,
-    for each finalist, how many other finalists it beats across the 3
-    ballots, and flags the Condorcet winner (beats ALL others). Exact
-    integers end to end.
-
-    Scale shape: each ranker is a top-k (TakeOrderedAndProject); all
-    aggregation happens on the ≤3k ranked rows."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import bm25_topk
-
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id", "text", "n_chars"
-    )
-    r1 = bm25_topk(docs.select("doc_id", "text"), list(_BM25_TERMS), _RA_K).select(
-        "doc_id",
-        F.row_number().over(Window.orderBy(F.desc("score"), "doc_id")).alias("rk"),
-    )
-    # top-k FIRST (TakeOrderedAndProject — distributed), then the rank
-    # window runs on k rows only (never a global all-docs sort window)
-    r2 = (
-        docs.select("doc_id", "n_chars")
-        .orderBy(F.desc("n_chars"), "doc_id")
-        .limit(_RA_K)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.desc("n_chars"), "doc_id"))
-            .alias("rk"),
-        )
-    )
-    q6 = F.round(quality_score(F.col("text")), 6)
-    r3 = (
-        docs.select("doc_id", q6.alias("q"))
-        .orderBy(F.desc("q"), "doc_id")
-        .limit(_RA_K)
-        .select(
-            "doc_id",
-            F.row_number().over(Window.orderBy(F.desc("q"), "doc_id")).alias("rk"),
-        )
-    )
-    ballots = (
-        r1.withColumn("ranker", F.lit(1))
-        .unionByName(r2.withColumn("ranker", F.lit(2)))
-        .unionByName(r3.withColumn("ranker", F.lit(3)))
-        .localCheckpoint(eager=True)
-    )
-    borda = (
-        ballots.groupBy("doc_id")
-        .agg(F.sum(F.lit(_RA_K) - F.col("rk")).alias("borda"))
-        .orderBy(F.desc("borda"), "doc_id")
-        .limit(4)
-        .localCheckpoint(eager=True)
-    )
-    fin = ballots.join(borda.select("doc_id"), "doc_id")
-    # rank of finalist d on ballot r; absent finalists rank k+1
-    pairs = (
-        borda.select(F.col("doc_id").alias("da"))
-        .crossJoin(borda.select(F.col("doc_id").alias("db")))
-        .filter(F.col("da") != F.col("db"))
-    )
-    ranks = lambda side: fin.select(
-        F.col("doc_id").alias(side), "ranker", F.col("rk").alias(f"rk_{side}")
-    )
-    duel = (
-        pairs.crossJoin(spark.range(1, 4).select(F.col("id").alias("ranker")))
-        .join(ranks("da"), ["da", "ranker"], "left")
-        .join(ranks("db"), ["db", "ranker"], "left")
-        .select(
-            "da",
-            "db",
-            (
-                F.coalesce("rk_da", F.lit(_RA_K + 1))
-                < F.coalesce("rk_db", F.lit(_RA_K + 1))
-            ).cast("long").alias("w"),
-        )
-        .groupBy("da", "db")
-        .agg(F.sum("w").alias("wins_ab"))
-    )
-    beats = (
-        duel.filter(F.col("wins_ab") >= 2)
-        .groupBy(F.col("da").alias("doc_id"))
-        .agg(F.count(F.lit(1)).alias("pairwise_wins"))
-    )
-    return (
-        borda.join(beats, "doc_id", "left")
-        .select(
-            "doc_id",
-            "borda",
-            F.coalesce("pairwise_wins", F.lit(0)).alias("pairwise_wins"),
-            (F.coalesce("pairwise_wins", F.lit(0)) == 3).cast("long").alias(
-                "is_condorcet"
-            ),
-        )
-        .orderBy(F.desc("borda"), "doc_id")
-    )
-
-
-def _rank_aggregation_sql() -> str:
-    from raptor_service_spark.functions.text import quality_score_sql
-    from raptor_service_spark.operators.bm25 import bm25_sql
-
-    kw = bm25_sql("documents", list(_BM25_TERMS), _RA_K)
-    qual = quality_score_sql("text")
-    return f"""
-        WITH r1 AS (
-            SELECT doc_id, ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS rk
-            FROM ({kw})),
-        r2 AS (
-            SELECT doc_id, rk FROM (
-                SELECT doc_id, ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS rk
-                FROM documents) WHERE rk <= {_RA_K}),
-        r3 AS (
-            SELECT doc_id, rk FROM (
-                SELECT doc_id, ROW_NUMBER() OVER (
-                    ORDER BY ROUND({qual}, 6) DESC, doc_id) AS rk
-                FROM documents) WHERE rk <= {_RA_K}),
-        ballots AS MATERIALIZED (
-            SELECT doc_id, rk, 1 AS ranker FROM r1
-            UNION ALL SELECT doc_id, rk, 2 FROM r2
-            UNION ALL SELECT doc_id, rk, 3 FROM r3),
-        borda AS MATERIALIZED (
-            SELECT doc_id, CAST(SUM({_RA_K} - rk) AS BIGINT) AS borda
-            FROM ballots GROUP BY 1
-            ORDER BY borda DESC, doc_id LIMIT 4),
-        duel AS (
-            SELECT p.da, p.db,
-                   SUM(CASE WHEN COALESCE(ra.rk, {_RA_K + 1})
-                              < COALESCE(rb.rk, {_RA_K + 1})
-                            THEN 1 ELSE 0 END) AS wins_ab
-            FROM (SELECT a.doc_id AS da, b.doc_id AS db
-                  FROM borda a JOIN borda b ON a.doc_id != b.doc_id) p
-            CROSS JOIN (VALUES (1), (2), (3)) g(ranker)
-            LEFT JOIN ballots ra ON ra.doc_id = p.da AND ra.ranker = g.ranker
-            LEFT JOIN ballots rb ON rb.doc_id = p.db AND rb.ranker = g.ranker
-            GROUP BY 1, 2),
-        beats AS (
-            SELECT da AS doc_id, CAST(COUNT(*) AS BIGINT) AS pairwise_wins
-            FROM duel WHERE wins_ab >= 2 GROUP BY 1)
-        SELECT b.doc_id, b.borda,
-               COALESCE(t.pairwise_wins, 0) AS pairwise_wins,
-               CAST(CASE WHEN COALESCE(t.pairwise_wins, 0) = 3
-                         THEN 1 ELSE 0 END AS BIGINT) AS is_condorcet
-        FROM borda b LEFT JOIN beats t USING (doc_id)
-        ORDER BY b.borda DESC, b.doc_id
-    """
-
-
-# ---------------------------------------------------------------------------
-# rank-biased precision (session 13)
-# ---------------------------------------------------------------------------
-
-_RBP_P = 0.8
-_RBP_K = 20
-
-
-def q_rbp_eval(spark, sf_dir):
-    """Rank-biased precision (Moffat & Zobel 2008) of the BM25 ranking
-    with graded relevance = the quality score: RBP = (1−p)·Σ p^(i−1)·relᵢ
-    at p = 0.8, plus the residual p^k (the measurement's own uncertainty
-    from the unexamined tail) — the user-model complement to `ndcg_bm25`
-    (log discount) and `pr_curve_11pt`. Each term 9-dp pre-rounded.
-    O(k) after the top-k scan."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.bm25 import bm25_topk
-
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    rel = docs.select(
-        "doc_id", F.round(quality_score(F.col("text")), 6).alias("rel")
-    )
-    ranked = bm25_topk(docs, list(_BM25_TERMS), _RBP_K).select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.desc("score"), "doc_id"))
-        .alias("pos"),
-    )
-    return (
-        ranked.join(rel, "doc_id")
-        .select(
-            F.round(
-                F.lit(1.0 - _RBP_P)
-                * F.pow(F.lit(_RBP_P), F.col("pos") - 1)
-                * F.col("rel"),
-                9,
-            ).alias("g")
-        )
-        .agg(
-            F.round(F.sum("g"), 6).alias("rbp"),
-            F.round(F.lit(_RBP_P ** _RBP_K), 6).alias("residual"),
-            F.count(F.lit(1)).alias("k"),
-        )
-    )
-
-
-def _rbp_eval_sql() -> str:
-    from raptor_service_spark.functions.text import quality_score_sql
-    from raptor_service_spark.operators.bm25 import bm25_sql
-
-    kw = bm25_sql("documents", list(_BM25_TERMS), _RBP_K)
-    qual = quality_score_sql("text")
-    return f"""
-        WITH rel AS (SELECT doc_id, ROUND({qual}, 6) AS rel FROM documents),
-        ranked AS (
-            SELECT doc_id,
-                   ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS pos
-            FROM ({kw}))
-        SELECT ROUND(SUM(g), 6) AS rbp,
-               CAST(ROUND({_RBP_P ** _RBP_K!r}, 6) AS DOUBLE) AS residual,
-               CAST(COUNT(*) AS BIGINT) AS k
-        FROM (SELECT ROUND({1.0 - _RBP_P!r} * POW({_RBP_P!r}, pos - 1)
-                           * r.rel, 9) AS g
-              FROM ranked JOIN rel r USING (doc_id))
-    """
-
-
-# ---------------------------------------------------------------------------
-# log-rank test (session 13)
-# ---------------------------------------------------------------------------
-
-# (O1 − E1)²/V as one shared scalar tail over the exact integer risk table
-_LOGRANK_TAIL = (
-    "POW(o1 - e1, 2) / v"
-)
-
-
-def q_logrank_test(spark, sf_dir):
-    """Two-group log-rank test on time-to-first-purchase — the hypothesis
-    test that completes the survival triple (`kaplan_meier` curve,
-    `cox_ph` regression, THIS significance test), sharing cox_ph's exact
-    integer risk table: O1 = Σd1, E1 = Σd·n1/n, V = Σd·n0·n1(n−d)/(n²(n−1));
-    χ² = (O1−E1)²/V. Per-time E/V terms are 9-dp pre-rounded exact-ratio
-    floats. One user agg + one suffix window + one 1-row agg."""
-    risk = _cox_risk_table(spark, sf_dir)
-    n = F.col("n0") + F.col("n1")
-    d = F.col("d0") + F.col("d1")
-    agg = risk.agg(
-        F.sum("d1").alias("o1"),
-        F.round(F.sum(F.round(d * F.col("n1") / n, 9)), 9).alias("e1"),
-        F.round(
-            F.sum(
-                F.round(
-                    F.when(
-                        n > 1,
-                        d * F.col("n0") * F.col("n1") * (n - d)
-                        / (n * n * (n - F.lit(1))),
-                    ).otherwise(F.lit(0.0)),
-                    9,
-                )
-            ),
-            9,
-        ).alias("v"),
-    )
-    return agg.select(
-        "o1",
-        F.round("e1", 6).alias("e1"),
-        F.round(F.expr(_LOGRANK_TAIL), 6).alias("chi2"),
-    )
-
-
-def _logrank_test_sql() -> str:
-    risk = _cox_ph_sql().split("b0 AS")[0].rstrip().rstrip(",")
-    return f"""
-        {risk},
-        agg AS (
-            SELECT CAST(SUM(d1) AS BIGINT) AS o1,
-                   ROUND(SUM(ROUND((d0 + d1) * n1
-                                   / CAST(n0 + n1 AS DOUBLE), 9)), 9) AS e1,
-                   ROUND(SUM(ROUND(CASE WHEN n0 + n1 > 1 THEN
-                       (d0 + d1) * n0 * n1 * (n0 + n1 - d0 - d1)
-                       / (CAST(n0 + n1 AS DOUBLE) * (n0 + n1) * (n0 + n1 - 1))
-                       ELSE 0.0 END, 9)), 9) AS v
-            FROM risk)
-        SELECT o1, ROUND(e1, 6) AS e1,
-               ROUND({_LOGRANK_TAIL}, 6) AS chi2
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# effective mesh size (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_effective_mesh(spark, sf_dir):
-    """Landscape-fragmentation metrics (Jaeger 2000) over the equal-density
-    segments of `cell_segmentation`: effective mesh size m = Σaᵢ²/A,
-    degree of division D = 1 − Σ(aᵢ/A)², splitting index S = A²/Σaᵢ² —
-    THE standard trio for 'how broken up is this surface', downstream of
-    the same Borůvka component labeling. Exact integer areas; one float
-    tail."""
-    from raptor_service_spark.operators.mst import cell_edges, graph_components
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(lat.alias("lat"), lng.alias("lng"))
-    nodes = (
-        pts.select(
-            cell_encode_col(F.col("lat"), F.col("lng"), _SEG_RES).alias("cell")
-        )
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    edges = cell_edges(pts, _SEG_RES).filter(F.col("w") <= _SEG_MAXW)
-    comps = graph_components(edges, rounds=_MST_ROUNDS, nodes=nodes)
-    seg = comps.groupBy("comp").agg(F.count(F.lit(1)).alias("a"))
-    agg = seg.agg(
-        F.count(F.lit(1)).alias("n_segments"),
-        F.sum("a").alias("total_cells"),
-        F.sum(F.col("a") * F.col("a")).alias("sa2"),
-    )
-    return agg.select(
-        "n_segments",
-        "total_cells",
-        F.round(F.col("sa2") / F.col("total_cells").cast("double"), 6).alias("mesh"),
-        F.round(
-            F.lit(1.0)
-            - F.col("sa2")
-            / (F.col("total_cells") * F.col("total_cells")).cast("double"),
-            6,
-        ).alias("division"),
-        F.round(
-            (F.col("total_cells") * F.col("total_cells")).cast("double")
-            / F.col("sa2"),
-            6,
-        ).alias("splitting"),
-    )
-
-
-def _effective_mesh_sql() -> str:
-    from raptor_service_spark.operators.mst import boruvka_mst_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    comps = boruvka_mst_sql(
-        f"SELECT {lat} AS lat, {lng} AS lng FROM documents",
-        _SEG_RES,
-        rounds=_MST_ROUNDS,
-        jumps=_MST_JUMPS,
-        max_w=_SEG_MAXW,
-        final="components",
-    )
-    return f"""
-        WITH seg AS (
-            SELECT comp, CAST(COUNT(*) AS BIGINT) AS a
-            FROM ({comps}) GROUP BY 1),
-        agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_segments,
-                       CAST(SUM(a) AS BIGINT) AS total_cells,
-                       CAST(SUM(a * a) AS BIGINT) AS sa2
-                FROM seg)
-        SELECT n_segments, total_cells,
-               ROUND(sa2 / CAST(total_cells AS DOUBLE), 6) AS mesh,
-               ROUND(1.0 - sa2 / CAST(total_cells * total_cells AS DOUBLE), 6)
-                   AS division,
-               ROUND(CAST(total_cells * total_cells AS DOUBLE) / sa2, 6)
-                   AS splitting
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# harmonic centrality (session 13)
-# ---------------------------------------------------------------------------
-
-_HARM_RES = 4
-_HARM_R = 3
-
-
-def q_harmonic_centrality(spark, sf_dir):
-    """Harmonic centrality (radius-3 truncation) on the occupied res-4
-    lattice: H(c) = Σ 1/d(c, o) over occupied cells within Chebyshev
-    distance 3 — the disconnected-graph-safe closeness variant; on a
-    lattice the distance IS the ring offset, so no BFS at all: one
-    literal 48-offset explode carrying its own distance + one occupied
-    equi-join + one agg. Terms 9-dp pre-rounded exact ratios."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = (
-        d.select(cell_encode_col(lat, lng, _HARM_RES).alias("cell"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    arms = F.array(
-        *[
-            F.struct(
-                F.lit(max(abs(dx), abs(dy))).alias("dist"),
-                kring_neighbor_col("cell", _HARM_RES, dx, dy).alias("nbr"),
-            )
-            for dx, dy in _offsets(_HARM_R)
-            if (dx, dy) != (0, 0)
-        ]
-    )
-    ring = (
-        occ.select("cell", F.explode(arms).alias("o"))
-        .select("cell", "o.dist", "o.nbr")
-        .filter(F.col("nbr").isNotNull())
-        .join(occ.select(F.col("cell").alias("nbr")), "nbr")
-    )
-    return (
-        ring.groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_reached"),
-            F.round(F.sum(F.round(F.lit(1.0) / F.col("dist"), 9)), 6).alias(
-                "harmonic"
-            ),
-        )
-        .orderBy(F.desc("harmonic"), "cell")
-        .limit(20)
-    )
-
-
-def _harmonic_centrality_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _HARM_RES)
-    offs = ", ".join(
-        f"({max(abs(dx), abs(dy))}, {dx}, {dy})"
-        for dx, dy in _offsets(_HARM_R)
-        if (dx, dy) != (0, 0)
-    )
-    nbr = kring_neighbor_sql("o.cell", _HARM_RES, "v.dx", "v.dy")
-    return f"""
-        WITH occ AS MATERIALIZED (
-            SELECT DISTINCT {cell} AS cell FROM documents),
-        ring AS (
-            SELECT o.cell, v.dist
-            FROM occ o CROSS JOIN (VALUES {offs}) v(dist, dx, dy)
-            JOIN occ q ON q.cell = {nbr})
-        SELECT cell,
-               CAST(COUNT(*) AS BIGINT) AS n_reached,
-               ROUND(SUM(ROUND(1.0 / dist, 9)), 6) AS harmonic
-        FROM ring GROUP BY 1
-        ORDER BY harmonic DESC, cell LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# perceptual DCT hash (pHash) near-dup (session 13)
+# perceptual DCT hash (pHash) near-dup
 # ---------------------------------------------------------------------------
 
 
@@ -27777,12129 +4081,7 @@ def _media_phash_pairs_sql(n_docs: int = 40, seed: int = 67) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Hill diversity numbers (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_hill_diversity(spark, sf_dir):
-    """Hill diversity profile (q = 0, 1, 2) of event types per res-3 cell
-    — the unified ecology view the separate indices hint at: richness
-    (q0), exp(Shannon) (q1 — effective type count), inverse-Simpson
-    (q2 — dominance-weighted). The per-cell composition profile beside
-    `user_cell_entropy` (users) and `segregation_indices` (two-group).
-    p = exact count ratios; ln terms 9-dp pre-rounded. Busiest 10 cells.
-
-    Scale shape: one (cell, type) partial+final agg over events, then
-    O(cells×5) arithmetic."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    ct = (
-        ev.groupBy(
-            cell_encode_col(lat, lng, 3).alias("cell"), "event_type"
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    tot = ct.groupBy("cell").agg(F.sum("c").alias("n"))
-    j = ct.join(tot, "cell")
-    p = F.col("c") / F.col("n").cast("double")
-    per = j.groupBy("cell").agg(
-        F.max("n").alias("n"),
-        F.count(F.lit(1)).alias("q0"),
-        F.round(F.sum(F.round(-p * F.log(p), 9)), 9).alias("h"),
-        F.sum(F.round(p * p, 9)).alias("sp2"),
-    )
-    return (
-        per.select(
-            "cell",
-            "n",
-            "q0",
-            F.round(F.exp("h"), 6).alias("q1"),
-            F.round(F.lit(1.0) / F.col("sp2"), 6).alias("q2"),
-        )
-        .orderBy(F.desc("n"), "cell")
-        .limit(10)
-    )
-
-
-def _hill_diversity_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH ct AS (
-            SELECT {cell} AS cell, event_type, CAST(COUNT(*) AS BIGINT) AS c
-            FROM events GROUP BY 1, 2),
-        tot AS (SELECT cell, CAST(SUM(c) AS BIGINT) AS n FROM ct GROUP BY 1),
-        per AS (
-            SELECT ct.cell, MAX(n) AS n,
-                   CAST(COUNT(*) AS BIGINT) AS q0,
-                   ROUND(SUM(ROUND(-(CAST(c AS DOUBLE) / n)
-                                   * LN(CAST(c AS DOUBLE) / n), 9)), 9) AS h,
-                   SUM(ROUND(POW(CAST(c AS DOUBLE) / n, 2), 9)) AS sp2
-            FROM ct JOIN tot USING (cell)
-            GROUP BY 1)
-        SELECT cell, n, q0,
-               ROUND(EXP(h), 6) AS q1,
-               ROUND(1.0 / sp2, 6) AS q2
-        FROM per
-        ORDER BY n DESC, cell LIMIT 10
-    """
-
-
-# ---------------------------------------------------------------------------
-# clustering agreement: ARI + NMI (session 13)
-# ---------------------------------------------------------------------------
-
-_ARI_TAIL = (
-    "(sij - sa * sb / c2) / (0.5 * (sa + sb) - sa * sb / c2)"
-)
-
-
-def q_adjusted_rand(spark, sf_dir):
-    """Clustering-agreement audit between two event partitions — spatial
-    (res-2 cell) vs temporal (6-hour band): Adjusted Rand Index from the
-    exact integer pair-count contingency (the chance-corrected agreement)
-    plus NMI from the same table — the clustering-COMPARISON family
-    `silhouette_kmeans` (quality) doesn't cover. All pair counts are
-    exact BIGINTs; ARI is one shared scalar tail; NMI's ln runs on exact
-    ratios with 9-dp terms.
-
-    Scale shape: ONE (u, v) contingency agg over events + two marginal
-    aggs on the O(classes) table."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    lab = ev.select(
-        cell_encode_col(lat, lng, 2).alias("u"),
-        F.floor(F.hour("ts") / 6).cast("long").alias("v"),
-    )
-    ctg = lab.groupBy("u", "v").agg(F.count(F.lit(1)).alias("nij")).localCheckpoint(
-        eager=True
-    )
-    au = ctg.groupBy("u").agg(F.sum("nij").alias("a"))
-    bv = ctg.groupBy("v").agg(F.sum("nij").alias("b"))
-    n_row = ctg.agg(
-        F.sum("nij").alias("n"),
-        F.sum(F.col("nij") * (F.col("nij") - 1) / 2).cast("long").alias("sij"),
-    )
-    sa_row = au.agg(
-        F.sum(F.col("a") * (F.col("a") - 1) / 2).cast("long").alias("sa")
-    )
-    sb_row = bv.agg(
-        F.sum(F.col("b") * (F.col("b") - 1) / 2).cast("long").alias("sb")
-    )
-    # entropies / mutual information (9-dp pre-rounded exact-ratio terms)
-    hu = (
-        au.join(n_row.select("n"), F.lit(True))
-        .agg(
-            F.round(
-                F.sum(
-                    F.round(
-                        -(F.col("a") / F.col("n"))
-                        * F.log(F.col("a") / F.col("n")),
-                        9,
-                    )
-                ),
-                9,
-            ).alias("hu")
-        )
-    )
-    hv = (
-        bv.join(n_row.select("n"), F.lit(True))
-        .agg(
-            F.round(
-                F.sum(
-                    F.round(
-                        -(F.col("b") / F.col("n"))
-                        * F.log(F.col("b") / F.col("n")),
-                        9,
-                    )
-                ),
-                9,
-            ).alias("hv")
-        )
-    )
-    mi = (
-        ctg.join(au, "u")
-        .join(bv, "v")
-        .join(n_row.select("n"), F.lit(True))
-        .agg(
-            F.round(
-                F.sum(
-                    F.round(
-                        (F.col("nij") / F.col("n"))
-                        * F.log(
-                            F.col("n")
-                            * F.col("nij")
-                            / (F.col("a") * F.col("b")).cast("double")
-                        ),
-                        9,
-                    )
-                ),
-                9,
-            ).alias("mi")
-        )
-    )
-    parts = (
-        n_row.crossJoin(sa_row)
-        .crossJoin(sb_row)
-        .crossJoin(hu)
-        .crossJoin(hv)
-        .crossJoin(mi)
-        .select(
-            "n",
-            "sij",
-            "sa",
-            "sb",
-            (F.col("n") * (F.col("n") - 1) / 2).cast("double").alias("c2"),
-            "hu",
-            "hv",
-            "mi",
-        )
-    )
-    return parts.select(
-        "n",
-        F.round(F.expr(_ARI_TAIL), 6).alias("ari"),
-        F.round(F.col("mi") / F.sqrt(F.col("hu") * F.col("hv")), 6).alias("nmi"),
-    )
-
-
-def _adjusted_rand_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    return f"""
-        WITH lab AS (
-            SELECT {cell} AS u,
-                   CAST(FLOOR(hour(ts) / 6) AS BIGINT) AS v
-            FROM events),
-        ctg AS MATERIALIZED (
-            SELECT u, v, CAST(COUNT(*) AS BIGINT) AS nij
-            FROM lab GROUP BY 1, 2),
-        au AS (SELECT u, CAST(SUM(nij) AS BIGINT) AS a FROM ctg GROUP BY 1),
-        bv AS (SELECT v, CAST(SUM(nij) AS BIGINT) AS b FROM ctg GROUP BY 1),
-        nr AS (SELECT CAST(SUM(nij) AS BIGINT) AS n,
-                      CAST(SUM(nij * (nij - 1) / 2) AS BIGINT) AS sij
-               FROM ctg),
-        sar AS (SELECT CAST(SUM(a * (a - 1) / 2) AS BIGINT) AS sa FROM au),
-        sbr AS (SELECT CAST(SUM(b * (b - 1) / 2) AS BIGINT) AS sb FROM bv),
-        hur AS (SELECT ROUND(SUM(ROUND(-(CAST(a AS DOUBLE) / n)
-                                       * LN(CAST(a AS DOUBLE) / n), 9)), 9) AS hu
-                FROM au CROSS JOIN nr),
-        hvr AS (SELECT ROUND(SUM(ROUND(-(CAST(b AS DOUBLE) / n)
-                                       * LN(CAST(b AS DOUBLE) / n), 9)), 9) AS hv
-                FROM bv CROSS JOIN nr),
-        mir AS (SELECT ROUND(SUM(ROUND((CAST(nij AS DOUBLE) / n)
-                           * LN(n * CAST(nij AS DOUBLE) / (a * CAST(b AS DOUBLE))), 9)), 9) AS mi
-                FROM ctg JOIN au USING (u) JOIN bv USING (v) CROSS JOIN nr),
-        parts AS (
-            SELECT n, sij, sa, sb,
-                   CAST(n * (n - 1) / 2 AS DOUBLE) AS c2, hu, hv, mi
-            FROM nr CROSS JOIN sar CROSS JOIN sbr
-            CROSS JOIN hur CROSS JOIN hvr CROSS JOIN mir)
-        SELECT n,
-               ROUND({_ARI_TAIL}, 6) AS ari,
-               ROUND(mi / SQRT(hu * hv), 6) AS nmi
-        FROM parts
-    """
-
-
-# ---------------------------------------------------------------------------
-# Croston intermittent-demand forecast (session 13)
-# ---------------------------------------------------------------------------
-
-_CROSTON_A = 0.2
-
-
-def _croston_step(dialect: str) -> str:
-    """One Croston update as a single expression, generated for both
-    engines from this one source (the LRU/SPRT fold technique). State =
-    [z, p, q, started] (DOUBLE list): z = smoothed demand size, p =
-    smoothed inter-demand interval, q = days since last demand. Each
-    smoothing update is round(·, 9) so the fold is cross-engine exact."""
-    a, b = _CROSTON_A, 1.0 - _CROSTON_A
-    if dialect == "spark":
-        x = "element_at(el, 1)"
-        z, p, q, st = (f"element_at(acc, {i})" for i in (1, 2, 3, 4))
-        arr = "array"
-    else:
-        x = "el[1]"
-        z, p, q, st = ("acc[1]", "acc[2]", "acc[3]", "acc[4]")
-        arr = "list_value"
-    return (
-        f"CASE WHEN {x} > 0 THEN "
-        f"CASE WHEN {st} = 0 THEN {arr}({x}, {q} + 1.0, 0.0, 1.0) "
-        f"ELSE {arr}(round({a!r} * {x} + {b!r} * {z}, 9), "
-        f"round({a!r} * ({q} + 1.0) + {b!r} * {p}, 9), 0.0, 1.0) END "
-        f"ELSE {arr}({z}, {p}, {q} + 1.0, {st}) END"
-    )
-
-
-def q_croston_cells(spark, sf_dir):
-    """Croston's method (1972) per res-3 cell: the intermittent-demand
-    forecaster — separate exponential smoothing of demand SIZES and
-    inter-demand INTERVALS over the daily 'purchase' series (zeros and
-    all), forecast = z/p — the right model when a cell buys rarely but
-    in bursts, where `holt_trend_cells`/`ewma_anomaly` smear. The whole
-    per-cell replay is ONE ordered array fold (aggregate ↔ list_reduce,
-    step generated from one source — `_croston_step`), every smoothing
-    update 9-dp rounded. Output: per occupied cell (grid-bounded ≤64
-    rows at ANY scale), demand-day count + z, p, forecast."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cnt = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            cell_encode_col(lat, lng, 3).alias("cell"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-        )
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    grid = (
-        cnt.select("cell")
-        .distinct()
-        .crossJoin(cnt.select("day").distinct())
-        .join(cnt, ["cell", "day"], "left")
-        .select(
-            "cell",
-            "day",
-            F.coalesce("x", F.lit(0)).cast("double").alias("x"),
-        )
-    )
-    series = grid.groupBy("cell").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "x"))), lambda s: s["x"]
-        ).alias("xs")
-    )
-    folded = series.withColumn(
-        "res",
-        F.expr(
-            "aggregate(transform(xs, x -> array(x)), "
-            f"array(0.0D, 0.0D, 0.0D, 0.0D), (acc, el) -> {_croston_step('spark')})"
-        ),
-    )
-    return (
-        folded.select(
-            "cell",
-            F.size(F.filter("xs", lambda x: x > 0)).alias("n_demand_days"),
-            F.round(F.element_at("res", 1), 6).alias("z"),
-            F.round(F.element_at("res", 2), 6).alias("p"),
-            F.round(F.element_at("res", 1) / F.element_at("res", 2), 6).alias(
-                "forecast"
-            ),
-        )
-        .filter(F.col("n_demand_days") > 0)
-        .orderBy("cell")
-    )
-
-
-def _croston_cells_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH cnt AS MATERIALIZED (
-            SELECT {cell} AS cell,
-                   strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events WHERE event_type = 'purchase'
-            GROUP BY 1, 2),
-        grid AS (
-            SELECT c.cell, d.day, CAST(COALESCE(n.x, 0) AS DOUBLE) AS x
-            FROM (SELECT DISTINCT cell FROM cnt) c
-            CROSS JOIN (SELECT DISTINCT day FROM cnt) d
-            LEFT JOIN cnt n ON n.cell = c.cell AND n.day = d.day),
-        series AS (
-            SELECT cell,
-                   list_transform(list_sort(list(struct_pack(day := day,
-                                                             x := x))),
-                                  s -> s.x) AS xs
-            FROM grid GROUP BY 1),
-        folded AS (
-            SELECT cell, xs,
-                   list_reduce(
-                       list_prepend([0.0, 0.0, 0.0, 0.0],
-                                    list_transform(xs, x -> [x])),
-                       (acc, el) -> {_croston_step('duckdb')}) AS res
-            FROM series)
-        SELECT cell,
-               CAST(len(list_filter(xs, x -> x > 0)) AS BIGINT)
-                   AS n_demand_days,
-               ROUND(res[1], 6) AS z,
-               ROUND(res[2], 6) AS p,
-               ROUND(res[1] / res[2], 6) AS forecast
-        FROM folded
-        WHERE len(list_filter(xs, x -> x > 0)) > 0
-        ORDER BY cell
-    """
-
-
-# ---------------------------------------------------------------------------
-# capture-recapture population estimate (session 13)
-# ---------------------------------------------------------------------------
-
-_CR_TAIL_N = (
-    "(CAST(n1 AS DOUBLE) + 1) * (CAST(n2 AS DOUBLE) + 1) "
-    "/ (CAST(m AS DOUBLE) + 1) - 1"
-)
-_CR_TAIL_V = (
-    "(CAST(n1 AS DOUBLE) + 1) * (CAST(n2 AS DOUBLE) + 1) * (n1 - m) * (n2 - m) "
-    "/ ((CAST(m AS DOUBLE) + 1) * (CAST(m AS DOUBLE) + 1) * (CAST(m AS DOUBLE) + 2))"
-)
-
-
-def q_capture_recapture(spark, sf_dir):
-    """Chapman capture-recapture estimate of the total user population
-    from two observation windows (active in days 1-10 vs days 11-20):
-    N̂ = (n1+1)(n2+1)/(m+1) − 1 with its variance-based 95% CI — the
-    mark-recapture estimator ecology and dedup-count auditing share
-    (how many users exist that we NEVER saw). Exact integer (n1, n2, m);
-    shared scalar float tails.
-
-    Scale shape: one user-flag agg over events + a 1-row tail."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts")
-    mind = ev.agg(F.min(F.date_trunc("day", "ts")).alias("mind"))
-    flags = (
-        ev.crossJoin(mind)
-        .select(
-            "user_id",
-            F.datediff(F.date_trunc("day", "ts"), "mind").alias("d"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.max((F.col("d") < 10).cast("long")).alias("s1"),
-            F.max(((F.col("d") >= 10) & (F.col("d") < 20)).cast("long")).alias(
-                "s2"
-            ),
-        )
-    )
-    agg = flags.agg(
-        F.sum("s1").alias("n1"),
-        F.sum("s2").alias("n2"),
-        F.sum(F.col("s1") * F.col("s2")).alias("m"),
-        F.count(F.lit(1)).alias("n_seen"),
-    )
-    return agg.select(
-        "n1",
-        "n2",
-        "m",
-        "n_seen",
-        F.round(F.expr(_CR_TAIL_N), 6).alias("n_hat"),
-        F.round(
-            F.expr(_CR_TAIL_N) - F.lit(1.96) * F.sqrt(F.expr(_CR_TAIL_V)), 6
-        ).alias("ci_low"),
-        F.round(
-            F.expr(_CR_TAIL_N) + F.lit(1.96) * F.sqrt(F.expr(_CR_TAIL_V)), 6
-        ).alias("ci_high"),
-    )
-
-
-def _capture_recapture_sql() -> str:
-    return f"""
-        WITH flags AS (
-            SELECT user_id,
-                   MAX(CASE WHEN d < 10 THEN 1 ELSE 0 END) AS s1,
-                   MAX(CASE WHEN d >= 10 AND d < 20 THEN 1 ELSE 0 END) AS s2
-            FROM (SELECT user_id,
-                         date_diff('day',
-                             (SELECT MIN(date_trunc('day', ts)) FROM events),
-                             date_trunc('day', ts)) AS d
-                  FROM events)
-            GROUP BY 1),
-        agg AS (
-            SELECT CAST(SUM(s1) AS BIGINT) AS n1,
-                   CAST(SUM(s2) AS BIGINT) AS n2,
-                   CAST(SUM(s1 * s2) AS BIGINT) AS m,
-                   CAST(COUNT(*) AS BIGINT) AS n_seen
-            FROM flags)
-        SELECT n1, n2, m, n_seen,
-               ROUND({_CR_TAIL_N}, 6) AS n_hat,
-               ROUND({_CR_TAIL_N} - 1.96 * SQRT({_CR_TAIL_V}), 6) AS ci_low,
-               ROUND({_CR_TAIL_N} + 1.96 * SQRT({_CR_TAIL_V}), 6) AS ci_high
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# Huber robust regression via IRLS (session 13)
-# ---------------------------------------------------------------------------
-
-_HUBER_K = 1.5
-_HUBER_ROUNDS = 3
-
-
-def q_huber_irls(spark, sf_dir):
-    """Huber M-estimation of the daily event-count trend line — the
-    robust-LOSS member of the regression family (`ridge_regression` = L2,
-    `theil_sen_cells` = rank, `ransac_fit` = consensus, this = bounded
-    influence): 3 IRLS rounds of weighted least squares with
-    w = min(1, k·s/|r|), scale s fixed from the round-0 OLS residual MAD
-    proxy (median |r| · 1.4826, exact order statistic). Every weight and
-    sum 9-dp pre-rounded, betas re-rounded 9 dp (driver-literal
-    protocol). Output: OLS vs Huber (b0, b1) — the outlier days' pull.
-
-    Scale shape: one day agg over the points; each round ONE codegen agg
-    over the O(days) series."""
-    from pyspark.sql import Window
-
-    days0 = (
-        _read(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").alias("d"))
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    mind = days0.select(F.min("d").alias("mind"))
-    days = (
-        days0.crossJoin(mind)
-        .select(
-            F.datediff("d", "mind").cast("double").alias("x"),
-            F.col("y").cast("double").alias("y"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # round 0: plain OLS from exact integer sums
-    s = days.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    ).collect()[0]
-    det = s["n"] * s["sxx"] - s["sx"] * s["sx"]
-    b0_ols = _round_half_up((s["sxx"] * s["sy"] - s["sx"] * s["sxy"]) / det, 9).item()
-    b1_ols = _round_half_up((s["n"] * s["sxy"] - s["sx"] * s["sy"]) / det, 9).item()
-    med = (
-        days.select(
-            F.abs(F.col("y") - (F.lit(b0_ols) + F.lit(b1_ols) * F.col("x"))).alias(
-                "ar"
-            )
-        )
-        .agg(F.median("ar").alias("m"))
-        .collect()[0]["m"]
-    )
-    scale = _round_half_up(1.4826 * med, 9).item()
-    b0, b1 = b0_ols, b1_ols
-    for _ in range(_HUBER_ROUNDS):
-        r = F.col("y") - (F.lit(b0) + F.lit(b1) * F.col("x"))
-        w = F.round(
-            F.least(F.lit(1.0), F.lit(_HUBER_K * scale) / F.abs(r)), 9
-        )
-        ws = days.agg(
-            F.sum(F.round(w, 9)).alias("sw"),
-            F.sum(F.round(w * F.col("x"), 9)).alias("swx"),
-            F.sum(F.round(w * F.col("x") * F.col("x"), 9)).alias("swxx"),
-            F.sum(F.round(w * F.col("y"), 9)).alias("swy"),
-            F.sum(F.round(w * F.col("x") * F.col("y"), 9)).alias("swxy"),
-        ).collect()[0]
-        dd = ws["sw"] * ws["swxx"] - ws["swx"] * ws["swx"]
-        b0 = _round_half_up(
-            (ws["swxx"] * ws["swy"] - ws["swx"] * ws["swxy"]) / dd, 9
-        ).item()
-        b1 = _round_half_up(
-            (ws["sw"] * ws["swxy"] - ws["swx"] * ws["swy"]) / dd, 9
-        ).item()
-    return spark.createDataFrame(
-        [
-            (
-                float(_round_half_up(b0_ols, 6)),
-                float(_round_half_up(b1_ols, 6)),
-                float(_round_half_up(b0, 6)),
-                float(_round_half_up(b1, 6)),
-                float(_round_half_up(scale, 6)),
-            )
-        ],
-        "b0_ols double, b1_ols double, b0_huber double, b1_huber double, scale double",
-    )
-
-
-def _huber_irls_sql() -> str:
-    k = _HUBER_K
-    steps = [
-        """ols AS (
-            SELECT ROUND((sxx * sy - sx * sxy) / (n * sxx - sx * sx), 9) AS b0,
-                   ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 9) AS b1
-            FROM (SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(x) AS sx,
-                         SUM(y) AS sy, SUM(x * x) AS sxx, SUM(x * y) AS sxy
-                  FROM days)),
-        sc AS (
-            SELECT ROUND(1.4826 * MEDIAN(ABS(y - (o.b0 + o.b1 * x))), 9) AS s
-            FROM days CROSS JOIN ols o)"""
-    ]
-    prev = "ols"
-    for r in range(1, _HUBER_ROUNDS + 1):
-        steps.append(
-            f"""w{r} AS (
-            SELECT SUM(ROUND(w, 9)) AS sw, SUM(ROUND(w * x, 9)) AS swx,
-                   SUM(ROUND(w * x * x, 9)) AS swxx,
-                   SUM(ROUND(w * y, 9)) AS swy,
-                   SUM(ROUND(w * x * y, 9)) AS swxy
-            FROM (SELECT x, y,
-                         ROUND(LEAST(1.0, {k!r} * sc.s
-                                     / ABS(y - (b.b0 + b.b1 * x))), 9) AS w
-                  FROM days CROSS JOIN {prev} b CROSS JOIN sc)),
-        h{r} AS (
-            SELECT ROUND((swxx * swy - swx * swxy)
-                         / (sw * swxx - swx * swx), 9) AS b0,
-                   ROUND((sw * swxy - swx * swy)
-                         / (sw * swxx - swx * swx), 9) AS b1
-            FROM w{r})"""
-        )
-        prev = f"h{r}"
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH days AS MATERIALIZED (
-            SELECT CAST(date_diff('day',
-                       (SELECT MIN(date_trunc('day', ts)) FROM events),
-                       date_trunc('day', ts)) AS DOUBLE) AS x,
-                   CAST(COUNT(*) AS DOUBLE) AS y
-            FROM events GROUP BY date_trunc('day', ts)),
-        {chain}
-        SELECT ROUND(o.b0, 6) AS b0_ols, ROUND(o.b1, 6) AS b1_ols,
-               ROUND(h.b0, 6) AS b0_huber, ROUND(h.b1, 6) AS b1_huber,
-               ROUND(sc.s, 6) AS scale
-        FROM ols o CROSS JOIN {prev} h CROSS JOIN sc
-    """
-
-
-# ---------------------------------------------------------------------------
-# Getis-Ord General G (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_general_g(spark, sf_dir):
-    """Getis-Ord General G — GLOBAL high/low clustering of the res-4
-    event-count surface under queen contiguity: G = Σ_ring xᵢxⱼ /
-    Σ_{i≠j} xᵢxⱼ with E[G] = W/(n(n−1)) — the hot-vs-cold global
-    complement to `morans_i` (which can't tell high clusters from low)
-    and the corpus-wide summary of the local `getis_hotspots`. EVERY
-    term is an exact BIGINT (numerator from the ring join; denominator
-    = (Σx)² − Σx²) — the float appears only in the final two ratios.
-
-    Scale shape: one point agg + the literal 8-offset ring join on the
-    O(occupied) table + two 1-row aggs."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    occ = (
-        ev.groupBy(cell_encode_col(lat, lng, 4).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    ring = [o for o in _offsets(1) if o != (0, 0)]
-    nbrs = F.array(
-        *[kring_neighbor_col("cell", 4, dx, dy) for dx, dy in ring]
-    )
-    pairs = (
-        occ.select("cell", "x", F.explode(F.filter(nbrs, lambda c: c.isNotNull())).alias("nbr"))
-        .join(occ.select(F.col("cell").alias("nbr"), F.col("x").alias("xn")), "nbr")
-    )
-    num = pairs.agg(
-        F.sum(F.col("x") * F.col("xn")).alias("num"),
-        F.count(F.lit(1)).alias("w_count"),
-    )
-    den = occ.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sx2"),
-    )
-    return num.crossJoin(den).select(
-        "n",
-        "w_count",
-        "num",
-        (F.col("sx") * F.col("sx") - F.col("sx2")).alias("den"),
-        F.round(
-            F.col("num") / (F.col("sx") * F.col("sx") - F.col("sx2")).cast("double"),
-            6,
-        ).alias("g"),
-        F.round(
-            F.col("w_count") / (F.col("n") * (F.col("n") - 1)).cast("double"), 6
-        ).alias("e_g"),
-    )
-
-
-def _general_g_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    ring = [o for o in _offsets(1) if o != (0, 0)]
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in ring)
-    nbr = kring_neighbor_sql("o.cell", 4, "v.dx", "v.dy")
-    return f"""
-        WITH occ AS MATERIALIZED (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        pr AS (
-            SELECT o.x, q.x AS xn
-            FROM occ o CROSS JOIN (VALUES {offs}) v(dx, dy)
-            JOIN occ q ON q.cell = {nbr}),
-        num AS (SELECT CAST(SUM(x * xn) AS BIGINT) AS num,
-                       CAST(COUNT(*) AS BIGINT) AS w_count
-                FROM pr),
-        den AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                       CAST(SUM(x) AS BIGINT) AS sx,
-                       CAST(SUM(x * x) AS BIGINT) AS sx2
-                FROM occ)
-        SELECT n, w_count, num,
-               CAST(sx * sx - sx2 AS BIGINT) AS den,
-               ROUND(num / CAST(sx * sx - sx2 AS DOUBLE), 6) AS g,
-               ROUND(w_count / CAST(n * (n - 1) AS DOUBLE), 6) AS e_g
-        FROM num CROSS JOIN den
-    """
-
-
-# ---------------------------------------------------------------------------
-# matrix profile (session 13)
-# ---------------------------------------------------------------------------
-
-_MP_W = 24  # window length (hours)
-_MP_EXCL = 12  # trivial-match exclusion zone
-
-
-def q_matrix_profile(spark, sf_dir):
-    """Matrix profile (Yeh et al. 2016) of the hourly event-count series:
-    for every 24-hour window, the squared distance to its nearest
-    non-trivial neighbor (|i−j| ≥ 12) — the time-series data-mining
-    primitive whose MINIMA are motifs (repeated daily shapes) and whose
-    MAXIMA are discords (anomalous days). Distances are raw integer
-    Σ(xᵢ₊ₖ−xⱼ₊ₖ)² — EXACT end to end, no normalization float. Output:
-    top-5 discords + top-5 motifs with their nearest-neighbor index.
-
-    Scale shape: the series is the time span, CONSTANT in data size
-    (720 hours at every SF): one point agg to hours, a dense-grid zero
-    fill, one k-literal window explode, one (697²-bounded) pair join +
-    agg — never touches point rows after the first agg."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hrs0 = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    minh = hrs0.select(F.min("h").alias("minh"))
-    hrs = (
-        hrs0.crossJoin(minh)
-        .select(
-            (
-                F.floor(
-                    (
-                        F.unix_micros(F.col("h").cast("timestamp"))
-                        - F.unix_micros(F.col("minh").cast("timestamp"))
-                    )
-                    / F.lit(3_600_000_000)
-                )
-            ).cast("long").alias("i"),
-            "x",
-        )
-    )
-    span = hrs.agg(F.max("i").alias("mx")).collect()[0]["mx"]
-    dense = (
-        spark.range(0, int(span) + 1)
-        .select(F.col("id").alias("i"))
-        .join(hrs, "i", "left")
-        .select("i", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    n_win = int(span) + 2 - _MP_W
-    ks = spark.range(0, _MP_W).select(F.col("id").alias("k"))
-    w = (
-        dense.crossJoin(ks)
-        .select((F.col("i") - F.col("k")).alias("s"), "k", "x")
-        .filter((F.col("s") >= 0) & (F.col("s") < n_win))
-    )
-    pairs = (
-        w.alias("a")
-        .join(
-            w.alias("b"),
-            (F.col("a.k") == F.col("b.k"))
-            & (
-                F.abs(F.col("a.s") - F.col("b.s")) >= _MP_EXCL
-            ),
-        )
-        .groupBy(F.col("a.s").alias("i"), F.col("b.s").alias("j"))
-        .agg(
-            F.sum(
-                (F.col("a.x") - F.col("b.x")) * (F.col("a.x") - F.col("b.x"))
-            ).alias("d2")
-        )
-    )
-    prof = pairs.groupBy("i").agg(
-        F.min(F.struct("d2", "j")).alias("nn")
-    ).select("i", F.col("nn.d2").alias("d2"), F.col("nn.j").alias("nn_j"))
-    disc = prof.orderBy(F.desc("d2"), "i").limit(5).withColumn(
-        "kind", F.lit("discord")
-    )
-    moti = prof.orderBy(F.asc("d2"), "i").limit(5).withColumn(
-        "kind", F.lit("motif")
-    )
-    return disc.unionByName(moti).select("kind", "i", "nn_j", "d2").orderBy(
-        "kind", F.desc(F.when(F.col("kind") == "discord", F.col("d2")).otherwise(-F.col("d2"))), "i"
-    )
-
-
-def _matrix_profile_sql() -> str:
-    return f"""
-        WITH hrs AS (
-            SELECT CAST(date_diff('hour',
-                       (SELECT MIN(date_trunc('hour', ts)) FROM events),
-                       date_trunc('hour', ts)) AS BIGINT) AS i,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY date_trunc('hour', ts)),
-        dense AS MATERIALIZED (
-            SELECT g.i, COALESCE(h.x, 0) AS x
-            FROM (SELECT UNNEST(range(0, (SELECT MAX(i) + 1 FROM hrs))) AS i) g
-            LEFT JOIN hrs h USING (i)),
-        nw AS (SELECT CAST(MAX(i) + 2 - {_MP_W} AS BIGINT) AS n FROM dense),
-        w AS MATERIALIZED (
-            SELECT d.i - k.k AS s, k.k, d.x
-            FROM dense d CROSS JOIN (SELECT UNNEST(range(0, {_MP_W})) AS k) k
-            CROSS JOIN nw
-            WHERE d.i - k.k >= 0 AND d.i - k.k < nw.n),
-        pairs AS (
-            SELECT a.s AS i, b.s AS j,
-                   CAST(SUM((a.x - b.x) * (a.x - b.x)) AS BIGINT) AS d2
-            FROM w a JOIN w b ON a.k = b.k AND ABS(a.s - b.s) >= {_MP_EXCL}
-            GROUP BY 1, 2),
-        prof AS (
-            SELECT i, d2, j AS nn_j FROM (
-                SELECT i, j, d2,
-                       ROW_NUMBER() OVER (PARTITION BY i ORDER BY d2, j) AS rn
-                FROM pairs) WHERE rn = 1),
-        disc AS (SELECT 'discord' AS kind, i, nn_j, d2 FROM prof
-                 ORDER BY d2 DESC, i LIMIT 5),
-        moti AS (SELECT 'motif' AS kind, i, nn_j, d2 FROM prof
-                 ORDER BY d2 ASC, i LIMIT 5)
-        SELECT kind, i, nn_j, d2 FROM (
-            SELECT * FROM disc UNION ALL SELECT * FROM moti)
-        ORDER BY kind,
-                 CASE WHEN kind = 'discord' THEN -d2 ELSE d2 END, i
-    """
-
-
-# ---------------------------------------------------------------------------
-# cross-domain LM perplexity (session 13)
-# ---------------------------------------------------------------------------
-
-_DSP_SOURCES = 5
-
-
-def q_domain_shift_ppl(spark, sf_dir):
-    """Cross-domain unigram perplexity matrix: train an add-1-smoothed
-    unigram LM on each of the first 5 sources, evaluate perplexity on
-    every source — the domain-mismatch screen a curation pipeline runs
-    before mixing corpora (high off-diagonal ppl = distribution shift;
-    the pairwise generalization of `doc_perplexity`, and the LM-based
-    cousin of `jsd_sources`/`psi_drift`). Vocabulary = union over the 5
-    sources, so smoothing mass is shared. ln on exact count ratios,
-    9-dp terms; ppl = exp(−Σ c_B(w)·ln p_A(w) / N_B).
-
-    Scale shape: ONE (source, word) explode+agg over the docs; the 5×5
-    matrix is a broadcast-sized join of aggregate tables."""
-    srcs = [f"src{i}" for i in range(_DSP_SOURCES)]
-    d = (
-        _read(spark, sf_dir, "documents")
-        .filter(F.col("source").isin(srcs))
-        .select(
-            "source",
-            F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w"),
-        )
-    )
-    cnt = d.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(
-        eager=True
-    )
-    tot = cnt.groupBy("source").agg(F.sum("c").alias("nt"))
-    vocab = cnt.select("w").distinct()
-    vsize = vocab.count()
-    # eval-side counts joined against train-side smoothed probs
-    ev_c = cnt.select(
-        F.col("source").alias("eval_src"), "w", F.col("c").alias("ce")
-    )
-    tr_c = cnt.select(F.col("source").alias("train_src"), "w", F.col("c").alias("ct"))
-    tr_t = tot.select(F.col("source").alias("train_src"), F.col("nt").alias("ntt"))
-    ev_t = tot.select(F.col("source").alias("eval_src"), F.col("nt").alias("nte"))
-    j = (
-        ev_c.crossJoin(tr_t.select("train_src").distinct())
-        .join(tr_c, ["train_src", "w"], "left")
-        .join(tr_t, "train_src")
-        .select(
-            "train_src",
-            "eval_src",
-            "ce",
-            F.round(
-                F.log(
-                    (F.coalesce("ct", F.lit(0)) + 1)
-                    / (F.col("ntt") + F.lit(vsize)).cast("double")
-                ),
-                9,
-            ).alias("lp"),
-        )
-    )
-    return (
-        j.groupBy("train_src", "eval_src")
-        .agg(F.round(F.sum(F.round(F.col("ce") * F.col("lp"), 9)), 9).alias("sll"))
-        .join(ev_t, "eval_src")
-        .select(
-            "train_src",
-            "eval_src",
-            F.round(F.exp(-F.col("sll") / F.col("nte")), 6).alias("ppl"),
-        )
-        .orderBy("train_src", "eval_src")
-    )
-
-
-def _domain_shift_ppl_sql() -> str:
-    from raptor_service_spark.operators.dedup import words_sql
-
-    srcs = ", ".join(f"'src{i}'" for i in range(_DSP_SOURCES))
-    w = words_sql("text")
-    return f"""
-        WITH cnt AS MATERIALIZED (
-            SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
-            FROM (SELECT source, UNNEST({w}) AS w
-                  FROM documents WHERE source IN ({srcs}))
-            GROUP BY 1, 2),
-        tot AS (SELECT source, CAST(SUM(c) AS BIGINT) AS nt
-                FROM cnt GROUP BY 1),
-        vs AS (SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v FROM cnt),
-        j AS (
-            SELECT tr.source AS train_src, e.source AS eval_src, e.c AS ce,
-                   ROUND(LN((COALESCE(t.c, 0) + 1)
-                            / CAST(tt.nt + vs.v AS DOUBLE)), 9) AS lp
-            FROM cnt e
-            CROSS JOIN (SELECT DISTINCT source FROM cnt) tr
-            LEFT JOIN cnt t ON t.source = tr.source AND t.w = e.w
-            JOIN tot tt ON tt.source = tr.source
-            CROSS JOIN vs),
-        sll AS (
-            SELECT train_src, eval_src,
-                   ROUND(SUM(ROUND(ce * lp, 9)), 9) AS sll
-            FROM j GROUP BY 1, 2)
-        SELECT s.train_src, s.eval_src,
-               ROUND(EXP(-s.sll / te.nt), 6) AS ppl
-        FROM sll s JOIN tot te ON te.source = s.eval_src
-        ORDER BY train_src, eval_src
-    """
-
-
-# ---------------------------------------------------------------------------
-# propensity-score stratified ATE (session 13)
-# ---------------------------------------------------------------------------
-
-_PS_ROUNDS = 5
-_PS_ETA = 0.5
-
-
-def q_propensity_ate(spark, sf_dir):
-    """Propensity-score stratification (Rosenbaum-Rubin): the
-    adjusted treatment effect of 'did sign up' on purchase count, where
-    raw comparison is confounded by user activity. PS = logistic of
-    treatment on [1, ln(n_events)] by 5 unrolled GD rounds (the
-    logreg_train protocol), users cut into 5 NTILE strata over
-    (ps, user_id) — a deterministic total order, so both engines cut
-    identically — ATE = Σ (n_s/n)(ȳ₁ₛ − ȳ₀ₛ) over strata with both arms
-    present. The observational-causal member beside `did_estimator`
-    (panel) and `cuped_adjustment` (variance reduction). Means are exact
-    integer ratios; σ pre-rounded 9 dp.
-
-    Scale shape: one user agg over events; 5 GD rounds of ONE codegen
-    agg each over the O(users) table; the strata agg is user-sized."""
-    import math
-
-    from pyspark.sql import Window
-
-    # treatment = the user's FIRST event (by ts, event_id) is a signup —
-    # ~20% of users at every SF, so both arms always exist (an "any signup
-    # ever" definition saturates to 100% as activity grows)
-    per = (
-        _read(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_ev"),
-            (
-                F.min(F.struct("ts", "event_id", "event_type"))["event_type"]
-                == "signup"
-            ).cast("long").alias("t"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias("y"),
-        )
-        .select(
-            "user_id",
-            "t",
-            "y",
-            F.lit(1.0).alias("x0"),
-            F.round(F.log("n_ev"), 6).alias("x1"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    n = per.count()
-    wv = [0.0, 0.0]
-    for _ in range(_PS_ROUNDS):
-        z = F.col("x0") * F.lit(wv[0]) + F.col("x1") * F.lit(wv[1])
-        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 9)
-        g = per.agg(
-            F.sum(F.round((p - F.col("t")) * F.col("x0"), 9)).alias("g0"),
-            F.sum(F.round((p - F.col("t")) * F.col("x1"), 9)).alias("g1"),
-        ).collect()[0]
-        wv = [
-            _round_half_up(wv[j] - _PS_ETA * g[f"g{j}"] / n, 9).item()
-            for j in range(2)
-        ]
-    z = F.col("x0") * F.lit(wv[0]) + F.col("x1") * F.lit(wv[1])
-    ps = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 9)
-    scored = per.select("user_id", "t", "y", ps.alias("ps"))
-    strat = scored.withColumn(
-        "s", F.ntile(5).over(Window.orderBy("ps", "user_id"))
-    )
-    cell = strat.groupBy("s").agg(
-        F.count(F.lit(1)).alias("ns"),
-        F.sum("t").alias("nt"),
-        F.sum(F.col("t") * F.col("y")).alias("yt"),
-        F.sum((1 - F.col("t")) * F.col("y")).alias("yc"),
-    )
-    ok = cell.filter((F.col("nt") > 0) & (F.col("nt") < F.col("ns")))
-    tot = ok.agg(F.sum("ns").alias("n_used"))
-    ate = (
-        ok.crossJoin(tot)
-        .select(
-            F.round(
-                (F.col("ns") / F.col("n_used").cast("double"))
-                * (
-                    F.col("yt") / F.col("nt").cast("double")
-                    - F.col("yc") / (F.col("ns") - F.col("nt")).cast("double")
-                ),
-                9,
-            ).alias("c")
-        )
-        .agg(F.round(F.sum("c"), 6).alias("ate"))
-        .collect()[0]["ate"]
-    )
-    naive = scored.agg(
-        F.round(
-            F.sum(F.col("t") * F.col("y")) / F.sum("t").cast("double")
-            - F.sum((1 - F.col("t")) * F.col("y"))
-            / F.sum(1 - F.col("t")).cast("double"),
-            6,
-        ).alias("naive")
-    ).collect()[0]["naive"]
-    return spark.createDataFrame(
-        [
-            (
-                int(n),
-                float(_round_half_up(wv[0], 6)),
-                float(_round_half_up(wv[1], 6)),
-                float(naive),
-                float(ate),
-            )
-        ],
-        "n_users long, w0 double, w1 double, naive_diff double, ate double",
-    )
-
-
-def _propensity_ate_sql() -> str:
-    steps = ["w0 AS (SELECT 0.0 AS a, 0.0 AS b)"]
-    prev = "w0"
-    for r in range(1, _PS_ROUNDS + 1):
-        steps.append(
-            f"""g{r} AS (
-            SELECT w.a, w.b,
-                   SUM(ROUND((ROUND(1.0 / (1.0 + EXP(-(w.a * x0 + w.b * x1))), 9)
-                              - t) * x0, 9)) AS g0,
-                   SUM(ROUND((ROUND(1.0 / (1.0 + EXP(-(w.a * x0 + w.b * x1))), 9)
-                              - t) * x1, 9)) AS g1
-            FROM per CROSS JOIN {prev} w
-            GROUP BY 1, 2),
-        w{r} AS (
-            SELECT ROUND(a - {_PS_ETA!r} * g0 / (SELECT COUNT(*) FROM per), 9) AS a,
-                   ROUND(b - {_PS_ETA!r} * g1 / (SELECT COUNT(*) FROM per), 9) AS b
-            FROM g{r})"""
-        )
-        prev = f"w{r}"
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH per AS MATERIALIZED (
-            SELECT user_id,
-                   CASE WHEN (MIN(struct_pack(a := ts, b := event_id,
-                                               c := event_type))).c = 'signup'
-                        THEN 1 ELSE 0 END AS t,
-                   CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS y,
-                   1.0 AS x0,
-                   ROUND(LN(COUNT(*)), 6) AS x1
-            FROM events GROUP BY 1),
-        {chain},
-        scored AS (
-            SELECT user_id, t, y,
-                   ROUND(1.0 / (1.0 + EXP(-(w.a * x0 + w.b * x1))), 9) AS ps
-            FROM per CROSS JOIN {prev} w),
-        strat AS (
-            SELECT *, NTILE(5) OVER (ORDER BY ps, user_id) AS s FROM scored),
-        cell AS (
-            SELECT s, CAST(COUNT(*) AS BIGINT) AS ns,
-                   CAST(SUM(t) AS BIGINT) AS nt,
-                   CAST(SUM(t * y) AS BIGINT) AS yt,
-                   CAST(SUM((1 - t) * y) AS BIGINT) AS yc
-            FROM strat GROUP BY 1),
-        ok AS (SELECT * FROM cell WHERE nt > 0 AND nt < ns),
-        tot AS (SELECT CAST(SUM(ns) AS BIGINT) AS n_used FROM ok),
-        ate AS (
-            SELECT ROUND(SUM(ROUND(
-                (ns / CAST(n_used AS DOUBLE))
-                * (yt / CAST(nt AS DOUBLE)
-                   - yc / CAST(ns - nt AS DOUBLE)), 9)), 6) AS ate
-            FROM ok CROSS JOIN tot),
-        naive AS (
-            SELECT ROUND(SUM(t * y) / CAST(SUM(t) AS DOUBLE)
-                         - SUM((1 - t) * y) / CAST(SUM(1 - t) AS DOUBLE), 6)
-                   AS naive
-            FROM scored)
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM per) AS n_users,
-               ROUND(w.a, 6) AS w0, ROUND(w.b, 6) AS w1,
-               naive.naive AS naive_diff, ate.ate
-        FROM {prev} w CROSS JOIN naive CROSS JOIN ate
-    """
-
-
-# ---------------------------------------------------------------------------
-# cluster-sampling design effect (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_design_effect(spark, sf_dir):
-    """Survey-sampling design effect of cluster-sampling by res-3 cell
-    for estimating the purchase rate: one-way ANOVA intraclass
-    correlation ρ = (MSB − MSW)/(MSB + (m₀−1)MSW) with the unequal-size
-    m₀ correction, DEFF = 1 + (m̄−1)ρ — 'how many extra samples does
-    spatial clustering cost you', the design-side complement of the
-    estimation-side `james_stein`. Every sum is an exact BIGINT (y is
-    0/1 ⇒ Σy² = Σy); one shared float tail.
-
-    Scale shape: one (cell) agg over events + two 1-row aggs."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cl = (
-        ev.groupBy(cell_encode_col(lat, lng, 3).alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("m"),
-            F.sum((F.col("event_type") == "purchase").cast("long")).alias("s"),
-        )
-    )
-    agg = cl.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("m").alias("n"),
-        F.sum("s").alias("sy"),
-        F.sum(F.col("m") * F.col("m")).alias("sm2"),
-        F.sum(
-            F.round((F.col("s") * F.col("s")) / F.col("m").cast("double"), 9)
-        ).alias("ssb_raw"),
-    )
-    return agg.select(
-        "k",
-        "n",
-        F.round(
-            (F.col("ssb_raw") - F.col("sy") * F.col("sy") / F.col("n").cast("double"))
-            / (F.col("k") - 1),
-            9,
-        ).alias("msb"),
-        F.round(
-            (F.col("sy") - F.col("ssb_raw")) / (F.col("n") - F.col("k")).cast("double"),
-            9,
-        ).alias("msw"),
-        F.round(
-            (F.col("n") - F.col("sm2") / F.col("n").cast("double"))
-            / (F.col("k") - 1),
-            9,
-        ).alias("m0"),
-    ).select(
-        "k",
-        "n",
-        F.round(
-            (F.col("msb") - F.col("msw"))
-            / (F.col("msb") + (F.col("m0") - 1) * F.col("msw")),
-            6,
-        ).alias("icc"),
-        F.round(
-            F.lit(1.0)
-            + (F.col("n") / F.col("k").cast("double") - 1)
-            * (F.col("msb") - F.col("msw"))
-            / (F.col("msb") + (F.col("m0") - 1) * F.col("msw")),
-            6,
-        ).alias("deff"),
-    )
-
-
-def _design_effect_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH cl AS (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS m,
-                   CAST(SUM(CASE WHEN event_type = 'purchase'
-                            THEN 1 ELSE 0 END) AS BIGINT) AS s
-            FROM events GROUP BY 1),
-        agg AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                   CAST(SUM(m) AS BIGINT) AS n,
-                   CAST(SUM(s) AS BIGINT) AS sy,
-                   CAST(SUM(m * m) AS BIGINT) AS sm2,
-                   SUM(ROUND(s * s / CAST(m AS DOUBLE), 9)) AS ssb_raw
-            FROM cl),
-        ms AS (
-            SELECT k, n,
-                   ROUND((ssb_raw - sy * sy / CAST(n AS DOUBLE)) / (k - 1), 9)
-                       AS msb,
-                   ROUND((sy - ssb_raw) / CAST(n - k AS DOUBLE), 9) AS msw,
-                   ROUND((n - sm2 / CAST(n AS DOUBLE)) / (k - 1), 9) AS m0
-            FROM agg)
-        SELECT k, n,
-               ROUND((msb - msw) / (msb + (m0 - 1) * msw), 6) AS icc,
-               ROUND(1.0 + (n / CAST(k AS DOUBLE) - 1)
-                     * (msb - msw) / (msb + (m0 - 1) * msw), 6) AS deff
-        FROM ms
-    """
-
-
-# ---------------------------------------------------------------------------
-# GPD tail fit / peaks over threshold (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_gpd_tail(spark, sf_dir):
-    """Extreme-value tail analysis of event values: peaks-over-threshold
-    with a method-of-moments Generalized Pareto fit — threshold u = the
-    exact ⌈0.95n⌉-th order statistic (integer-cent encoding, so the
-    quantile is deterministic, the conformal_intervals discipline),
-    ξ = (1 − m²/s²)/2, σ = m(1−ξ)(… of the excesses) — the EVT family
-    (tail risk / capacity planning) the body-centric stats
-    (`events_quantiles`, `mad_outliers`) don't cover.
-
-    Scale shape: one rank window to find u (cell-free global order on
-    integer cents — a top-5% selection), one agg over the O(n·0.05)
-    excesses."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    n = ev.count()
-    k = -(-95 * n // 100)  # ceil(0.95 n)
-    w = Window.orderBy("cents")
-    u_row = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == k)
-        .collect()[0]
-    )
-    u = int(u_row["cents"])
-    exc = ev.filter(F.col("cents") > u).select(
-        ((F.col("cents") - F.lit(u)) / F.lit(100.0)).alias("e")
-    )
-    agg = exc.agg(
-        F.count(F.lit(1)).alias("n_exc"),
-        F.sum(F.round("e", 9)).alias("se"),
-        F.sum(F.round(F.col("e") * F.col("e"), 9)).alias("se2"),
-    )
-    m = F.col("se") / F.col("n_exc")
-    s2 = (F.col("se2") - F.col("se") * F.col("se") / F.col("n_exc")) / (
-        F.col("n_exc") - 1
-    )
-    xi = F.round((F.lit(1.0) - m * m / s2) / 2, 9)
-    return agg.select(
-        F.lit(u / 100.0).alias("u"),
-        "n_exc",
-        F.round(m, 6).alias("mean_exc"),
-        F.round(xi, 6).alias("xi"),
-        F.round(m * (F.lit(1.0) - xi), 6).alias("sigma"),
-    )
-
-
-def _gpd_tail_sql() -> str:
-    return """
-        WITH c AS MATERIALIZED (
-            SELECT CAST(ROUND(value * 100) AS BIGINT) AS cents FROM events),
-        nrow AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM c),
-        u AS (
-            SELECT cents AS u FROM (
-                SELECT cents, ROW_NUMBER() OVER (ORDER BY cents) AS rn
-                FROM c) r CROSS JOIN nrow
-            WHERE rn = CAST(CEIL(0.95 * n) AS BIGINT)),
-        exc AS (
-            SELECT (c.cents - u.u) / 100.0 AS e
-            FROM c CROSS JOIN u WHERE c.cents > u.u),
-        agg AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n_exc,
-                   SUM(ROUND(e, 9)) AS se,
-                   SUM(ROUND(e * e, 9)) AS se2
-            FROM exc)
-        SELECT (SELECT u / 100.0 FROM u) AS u,
-               n_exc,
-               ROUND(se / n_exc, 6) AS mean_exc,
-               ROUND((1.0 - (se / n_exc) * (se / n_exc)
-                      / ((se2 - se * se / n_exc) / (n_exc - 1))) / 2, 6) AS xi,
-               ROUND((se / n_exc)
-                     * (1.0 - ROUND((1.0 - (se / n_exc) * (se / n_exc)
-                        / ((se2 - se * se / n_exc) / (n_exc - 1))) / 2, 9)), 6)
-                   AS sigma
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# sequential patterns (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_seq_patterns(spark, sf_dir):
-    """Top-20 sequential 3-patterns of event types (per-user consecutive
-    triples in (ts, event_id) order) with exact support counts and the
-    lift over the independence expectation — the order-sensitive
-    complement to `apriori_rules` (which ignores sequence). All-integer
-    counts; lift an exact ratio.
-
-    Scale shape: ONE user window carrying both leads, then count-table
-    joins."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tri = (
-        ev.select(
-            F.col("event_type").alias("e1"),
-            F.lead("event_type", 1).over(w).alias("e2"),
-            F.lead("event_type", 2).over(w).alias("e3"),
-        )
-        .filter(F.col("e3").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    n = tri.count()
-    cnt = tri.groupBy("e1", "e2", "e3").agg(F.count(F.lit(1)).alias("support"))
-    m1 = tri.groupBy("e1").agg(F.count(F.lit(1)).alias("c1"))
-    m2 = tri.groupBy("e2").agg(F.count(F.lit(1)).alias("c2"))
-    m3 = tri.groupBy("e3").agg(F.count(F.lit(1)).alias("c3"))
-    return (
-        cnt.join(m1, "e1")
-        .join(m2, "e2")
-        .join(m3, "e3")
-        .select(
-            "e1",
-            "e2",
-            "e3",
-            "support",
-            F.round(
-                F.col("support")
-                * F.lit(float(n))
-                * F.lit(float(n))
-                / (F.col("c1") * F.col("c2") * F.col("c3")).cast("double"),
-                6,
-            ).alias("lift"),
-        )
-        .orderBy(F.desc("support"), "e1", "e2", "e3")
-        .limit(20)
-    )
-
-
-def _seq_patterns_sql() -> str:
-    return """
-        WITH tri AS MATERIALIZED (
-            SELECT e1, e2, e3 FROM (
-                SELECT event_type AS e1,
-                       LEAD(event_type, 1) OVER (PARTITION BY user_id
-                           ORDER BY ts, event_id) AS e2,
-                       LEAD(event_type, 2) OVER (PARTITION BY user_id
-                           ORDER BY ts, event_id) AS e3
-                FROM events)
-            WHERE e3 IS NOT NULL),
-        n AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM tri),
-        cnt AS (SELECT e1, e2, e3, CAST(COUNT(*) AS BIGINT) AS support
-                FROM tri GROUP BY 1, 2, 3),
-        m1 AS (SELECT e1, CAST(COUNT(*) AS BIGINT) AS c1 FROM tri GROUP BY 1),
-        m2 AS (SELECT e2, CAST(COUNT(*) AS BIGINT) AS c2 FROM tri GROUP BY 1),
-        m3 AS (SELECT e3, CAST(COUNT(*) AS BIGINT) AS c3 FROM tri GROUP BY 1)
-        SELECT e1, e2, e3, support,
-               ROUND(support * n.n * n.n
-                     / CAST(c1 * c2 * c3 AS DOUBLE), 6) AS lift
-        FROM cnt JOIN m1 USING (e1) JOIN m2 USING (e2) JOIN m3 USING (e3)
-        CROSS JOIN n
-        ORDER BY support DESC, e1, e2, e3 LIMIT 20
-    """
-
-
-# ---------------------------------------------------------------------------
-# pair correlation function (session 13)
-# ---------------------------------------------------------------------------
-
-_PCF_RES = 5
-_PCF_RMAX = 4
-
-
-def q_pair_correlation(spark, sf_dir):
-    """Pair correlation function g(r) of the document pattern at exact
-    Chebyshev ring distances 1..4 on the res-5 grid — the
-    DERIVATIVE-style point-pattern statistic (interaction at distance
-    exactly r) that Ripley's K/L (cumulative) smears: g(r) = observed
-    ring-r pair weight / (λ²·V_r), λ = points per lattice cell, V_r =
-    the number of valid ordered cell pairs at ring r (lng wrap, lat
-    clamp — counted exactly over the full 1024-cell lattice). ALL
-    integers until the final ratio.
-
-    Scale shape: one point agg, a distance-carrying offset explode on
-    O(occupied) + equi-join, and a CONSTANT 1024-row lattice-geometry
-    count."""
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = (
-        d.select(cell_encode_col(lat, lng, _PCF_RES).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    # ring fan-out via a CONSTANTS-ONLY offsets explode, neighbor id computed
-    # ONCE post-explode: the per-element-expression array form generated the
-    # decode arithmetic 80x and blew the 64 KB JVM method limit (Janino
-    # fallback, BENCH_r03 tail) — see neighborhood.ring_offsets_explode.
-    offs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(max(abs(dx), abs(dy))).alias("r"),
-                    F.lit(dx).alias("dx"),
-                    F.lit(dy).alias("dy"),
-                )
-                for dx, dy in _offsets(_PCF_RMAX)
-                if (dx, dy) != (0, 0)
-            ]
-        )
-    )
-    obs = (
-        occ.select("cell", "x", offs.alias("o"))
-        .select(
-            "x",
-            F.col("o.r").alias("r"),
-            kring_neighbor_col(
-                "cell", _PCF_RES, F.col("o.dx"), F.col("o.dy")
-            ).alias("nbr"),
-        )
-        .filter(F.col("nbr").isNotNull())
-        .join(occ.select(F.col("cell").alias("nbr"), F.col("x").alias("xn")), "nbr")
-        .groupBy("r")
-        .agg(F.sum(F.col("x") * F.col("xn")).alias("obs"))
-    )
-    n = 1 << _PCF_RES
-    lattice = spark.range(n * n).select(
-        (F.lit(_PCF_RES * RES_MULTIPLIER) + F.col("id")).alias("cell")
-    )
-    vr = (
-        lattice.select("cell", offs.alias("o"))
-        .select(
-            F.col("o.r").alias("r"),
-            kring_neighbor_col(
-                "cell", _PCF_RES, F.col("o.dx"), F.col("o.dy")
-            ).alias("nbr"),
-        )
-        .filter(F.col("nbr").isNotNull())
-        .groupBy("r")
-        .agg(F.count(F.lit(1)).alias("v"))
-    )
-    tot = occ.agg(F.sum("x").alias("np"))
-    return (
-        obs.join(vr, "r")
-        .crossJoin(tot)
-        .select(
-            "r",
-            "obs",
-            "v",
-            F.round(
-                F.col("obs")
-                * F.lit(float(n * n))
-                * F.lit(float(n * n))
-                / (F.col("np") * F.col("np") * F.col("v")).cast("double"),
-                6,
-            ).alias("g"),
-        )
-        .orderBy("r")
-    )
-
-
-def _pair_correlation_sql() -> str:
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, _PCF_RES)
-    n = 1 << _PCF_RES
-    offs = ", ".join(
-        f"({max(abs(dx), abs(dy))}, {dx}, {dy})"
-        for dx, dy in _offsets(_PCF_RMAX)
-        if (dx, dy) != (0, 0)
-    )
-    nbr_o = kring_neighbor_sql("o.cell", _PCF_RES, "v.dx", "v.dy")
-    nbr_l = kring_neighbor_sql("l.cell", _PCF_RES, "v.dx", "v.dy")
-    return f"""
-        WITH occ AS MATERIALIZED (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS x
-            FROM documents GROUP BY 1),
-        obs AS (
-            SELECT v.r, CAST(SUM(o.x * q.x) AS BIGINT) AS obs
-            FROM occ o CROSS JOIN (VALUES {offs}) v(r, dx, dy)
-            JOIN occ q ON q.cell = {nbr_o}
-            GROUP BY 1),
-        lattice AS (
-            SELECT {_PCF_RES * RES_MULTIPLIER} + UNNEST(range(0, {n * n}))
-                   AS cell),
-        vr AS (
-            SELECT v.r, CAST(COUNT(*) AS BIGINT) AS v
-            FROM lattice l CROSS JOIN (VALUES {offs}) v(r, dx, dy)
-            WHERE {nbr_l} IS NOT NULL
-            GROUP BY 1),
-        tot AS (SELECT CAST(SUM(x) AS BIGINT) AS np FROM occ)
-        SELECT obs.r, obs.obs, vr.v,
-               ROUND(obs.obs * {float(n * n)!r} * {float(n * n)!r}
-                     / CAST(np * np * vr.v AS DOUBLE), 6) AS g
-        FROM obs JOIN vr USING (r) CROSS JOIN tot
-        ORDER BY r
-    """
-
-
-# ---------------------------------------------------------------------------
-# ABC / Pareto analysis (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_abc_analysis(spark, sf_dir):
-    """ABC (Pareto 80/95) classification of res-4 cells by event volume —
-    the inventory-analytics classic (which tiles are the vital few):
-    cells sorted by count desc (tie: cell asc), class A while the
-    RUNNING total ≤ 80% of the grand total, B ≤ 95%, else C — both
-    boundaries evaluated as exact integer cross-multiplications
-    (cum·20 ≤ 16·total / cum·20 ≤ 19·total), zero float until the
-    reported shares. Output: per class, cell count + event share.
-
-    Scale shape: one point agg + ONE running-sum window over the
-    O(cells) table."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cells = ev.groupBy(cell_encode_col(lat, lng, 4).alias("cell")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    w = Window.orderBy(F.desc("x"), "cell").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    tot = cells.agg(F.sum("x").alias("t"))
-    cum = cells.withColumn("cum", F.sum("x").over(w)).crossJoin(tot)
-    cls = (
-        F.when(F.col("cum") * 20 <= F.col("t") * 16, "A")
-        .when(F.col("cum") * 20 <= F.col("t") * 19, "B")
-        .otherwise("C")
-    )
-    return (
-        cum.select(cls.alias("abc"), "x", "t")
-        .groupBy("abc")
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("x").alias("n_events"),
-            F.round(F.sum("x") / F.max("t").cast("double"), 6).alias("share"),
-        )
-        .orderBy("abc")
-    )
-
-
-def _abc_analysis_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH cells AS (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        tot AS (SELECT CAST(SUM(x) AS BIGINT) AS t FROM cells),
-        cum AS (
-            SELECT x, t,
-                   SUM(x) OVER (ORDER BY x DESC, cell
-                                ROWS UNBOUNDED PRECEDING) AS cum
-            FROM cells CROSS JOIN tot)
-        SELECT CASE WHEN cum * 20 <= t * 16 THEN 'A'
-                    WHEN cum * 20 <= t * 19 THEN 'B'
-                    ELSE 'C' END AS abc,
-               CAST(COUNT(*) AS BIGINT) AS n_cells,
-               CAST(SUM(x) AS BIGINT) AS n_events,
-               ROUND(SUM(x) / CAST(MAX(t) AS DOUBLE), 6) AS share
-        FROM cum
-        GROUP BY 1 ORDER BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# BM25F field-weighted retrieval (session 13)
-# ---------------------------------------------------------------------------
-
-_BM25F_WT = 3  # title field weight (body = 1)
-_BM25F_K1 = 1.2
-_BM25F_B = 0.75
-_BM25F_K = 10
-
-
-def _eq_term(t):
-    # NOTE: a `lambda x, t=t:` default-arg closure would look like a
-    # two-parameter (element, index) lambda to F.filter — factory instead
-    return lambda x: x == t
-
-
-def q_bm25f_topk(spark, sf_dir):
-    """BM25F (Robertson-Zaragoza field-weighted BM25): term frequency and
-    document length are WEIGHTED sums over fields — title (the first 3
-    words, weight 3) and body (weight 1) — then ONE saturation, which is
-    what distinguishes BM25F from naively summing per-field BM25 scores
-    (double saturation under-rewards title hits). Same query terms as
-    `bm25_topk`; title hits visibly outrank. tf/dl exact integers; idf
-    and the saturation 9-dp rounded.
-
-    Scale shape: one explode+agg postings build over docs (term filter
-    pushed into the explode), broadcast idf/avgdl scalars, global top-k
-    (TakeOrderedAndProject)."""
-    from pyspark.sql import Window
-
-    terms = list(_BM25_TERMS)
-    docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    words = F.split(F.lower(F.trim("text")), r"\s+")
-    fielded = docs.select(
-        "doc_id",
-        F.slice(words, 1, 3).alias("title"),
-        words.alias("body"),
-    )
-    # weighted length: wdl = WT*|title| + |body|; weighted tf per term
-    base = fielded.select(
-        "doc_id",
-        (F.lit(_BM25F_WT) * F.size("title") + F.size("body")).alias("wdl"),
-        *[
-            (
-                F.lit(_BM25F_WT)
-                * F.size(F.filter("title", _eq_term(t)))
-                + F.size(F.filter("body", _eq_term(t)))
-            ).alias(f"tf_{i}")
-            for i, t in enumerate(terms)
-        ],
-        *[
-            F.array_contains("body", t).cast("long").alias(f"df_{i}")
-            for i, t in enumerate(terms)
-        ],
-    ).localCheckpoint(eager=True)
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("wdl").alias("swdl"),
-        *[F.sum(f"df_{i}").alias(f"dfc_{i}") for i in range(len(terms))],
-    ).collect()[0]
-    n = stats["n"]
-    avgdl = stats["swdl"] / n
-    score = None
-    for i in range(len(terms)):
-        dfc = stats[f"dfc_{i}"]
-        idf = _round_half_up(
-            __import__("math").log((n - dfc + 0.5) / (dfc + 0.5) + 1.0), 9
-        ).item()
-        tf = F.col(f"tf_{i}")
-        sat = F.round(
-            tf
-            * (F.lit(_BM25F_K1) + 1)
-            / (
-                tf
-                + F.lit(_BM25F_K1)
-                * (
-                    F.lit(1 - _BM25F_B)
-                    + F.lit(_BM25F_B) * F.col("wdl") / F.lit(float(avgdl))
-                )
-            ),
-            9,
-        )
-        leg = F.round(F.lit(idf) * sat, 9)
-        score = leg if score is None else score + leg
-    return (
-        base.select("doc_id", F.round(score, 6).alias("score"))
-        .filter(F.col("score") > 0)
-        .orderBy(F.desc("score"), "doc_id")
-        .limit(_BM25F_K)
-    )
-
-
-def _bm25f_topk_sql() -> str:
-    terms = list(_BM25_TERMS)
-    w = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-    tf_cols = ", ".join(
-        f"""{_BM25F_WT} * len(list_filter(list_slice({w}, 1, 3), x -> x = '{t}'))
-            + len(list_filter({w}, x -> x = '{t}')) AS tf_{i},
-            CAST(list_contains({w}, '{t}') AS BIGINT) AS df_{i}"""
-        for i, t in enumerate(terms)
-    )
-    legs = " + ".join(
-        f"""ROUND(ROUND(LN((s.n - s.dfc_{i} + 0.5) / (s.dfc_{i} + 0.5) + 1.0), 9)
-            * ROUND(tf_{i} * ({_BM25F_K1!r} + 1)
-                    / (tf_{i} + {_BM25F_K1!r}
-                       * ({1 - _BM25F_B!r} + {_BM25F_B!r} * wdl
-                          / (s.swdl / CAST(s.n AS DOUBLE)))), 9), 9)"""
-        for i in range(len(terms))
-    )
-    dfs = ", ".join(
-        f"CAST(SUM(df_{i}) AS BIGINT) AS dfc_{i}" for i in range(len(terms))
-    )
-    return f"""
-        WITH base AS MATERIALIZED (
-            SELECT doc_id,
-                   {_BM25F_WT} * len(list_slice({w}, 1, 3)) + len({w}) AS wdl,
-                   {tf_cols}
-            FROM documents),
-        s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                     CAST(SUM(wdl) AS BIGINT) AS swdl, {dfs}
-              FROM base)
-        SELECT doc_id, ROUND({legs}, 6) AS score
-        FROM base CROSS JOIN s
-        WHERE ROUND({legs}, 6) > 0
-        ORDER BY score DESC, doc_id LIMIT {_BM25F_K}
-    """
-
-
-# ---------------------------------------------------------------------------
-# polygon polyfill (session 13)
-# ---------------------------------------------------------------------------
-
-_PF_RES = 6
-
-
-def q_polygon_polyfill(spark, sf_dir):
-    """Polygon → tile materialization (the H3 `polyfill` analog): every
-    res-6 cell whose CENTER lies strictly inside the TRI query polygon
-    (the standard center-containment convention), then compacted to the
-    minimal multi-res cover (`operators/compact_cells.py`) — the step
-    that turns a vector query geometry into the cell set a tile-indexed
-    store can scan, and the inverse direction of `contour_cases`
-    (raster→vector). The inside test is the shared cross-product
-    boolean; cell centers are the shared closed-form arithmetic — zero
-    libm, exact parity.
-
-    Scale shape: the lattice is CONSTANT (4096 cells at res 6): one
-    literal range, one codegen filter, the compact ladder's O(cover)
-    aggs. Output: (res, cell) cover + per-res counts via the cover
-    rows themselves."""
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER, cell_center_sql
-    from raptor_service_spark.operators.compact_cells import compact_cells
-
-    n = 1 << _PF_RES
-    lattice = spark.range(n * n).select(
-        (F.lit(_PF_RES * RES_MULTIPLIER) + F.col("id")).alias("cell")
-    )
-    clat, clng = cell_center_sql("cell", _PF_RES)
-    inside = _convex_inside_expr(TRI, clat, clng)
-    cells = lattice.filter(F.expr(inside))
-    cover = compact_cells(cells, res=_PF_RES, min_res=2)
-    return cover.select(
-        F.floor(F.col("cell") / F.lit(RES_MULTIPLIER)).cast("long").alias("res"),
-        "cell",
-    ).orderBy("res", "cell")
-
-
-def _polygon_polyfill_sql() -> str:
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER, cell_center_sql
-    from raptor_service_spark.operators.compact_cells import compact_cells_sql
-
-    n = 1 << _PF_RES
-    clat, clng = cell_center_sql("cell", _PF_RES)
-    inside = _convex_inside_expr(TRI, clat, clng)
-    base = f"""
-        SELECT cell FROM (
-            SELECT {_PF_RES * RES_MULTIPLIER} + UNNEST(range(0, {n * n}))
-                   AS cell)
-        WHERE {inside}
-    """
-    inner = compact_cells_sql(base, res=_PF_RES, min_res=2)
-    return f"""
-        SELECT CAST(FLOOR(cell / {RES_MULTIPLIER}) AS BIGINT) AS res, cell
-        FROM ({inner}) ORDER BY res, cell
-    """
-
-
-# ---------------------------------------------------------------------------
-# trimmed / winsorized means (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_trimmed_means(spark, sf_dir):
-    """10%-trimmed and winsorized means of event value per res-3 cell —
-    the robust-location pair (`mad_outliers` flags points; these
-    re-ESTIMATE under contamination): exact integer-cent order
-    statistics via one cell-partitioned rank window (no global sort),
-    trim bounds ⌊0.1n⌋ each side, winsorize by clamping to the exact
-    boundary order statistics. Every mean is an exact integer-cents
-    ratio. Top-10 cells by |raw − trimmed| — where the tails distorted
-    the plain mean most.
-
-    Scale shape: one point shuffle (the cell window), then cell-sized
-    aggs."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    vals = ev.select(
-        cell_encode_col(lat, lng, 3).alias("cell"),
-        F.round(F.col("value") * 100).cast("long").alias("c"),
-    )
-    w = Window.partitionBy("cell").orderBy("c")
-    ranked = vals.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count(F.lit(1)).over(Window.partitionBy("cell"))
-    )
-    k = F.floor(F.col("n") / 10)
-    bounds = ranked.groupBy("cell").agg(
-        F.max("n").alias("n"),
-        F.max(F.when(F.col("rn") == k + 1, F.col("c"))).alias("lo"),
-        F.max(F.when(F.col("rn") == F.col("n") - k, F.col("c"))).alias("hi"),
-    )
-    j = ranked.join(bounds.select("cell", "lo", "hi"), "cell")
-    agg = j.groupBy("cell").agg(
-        F.max("n").alias("n"),
-        F.sum("c").alias("sc"),
-        F.sum(
-            F.when(
-                (F.col("rn") > F.floor(F.col("n") / 10))
-                & (F.col("rn") <= F.col("n") - F.floor(F.col("n") / 10)),
-                F.col("c"),
-            ).otherwise(0)
-        ).alias("st"),
-        F.sum(
-            F.greatest(F.col("lo"), F.least(F.col("hi"), F.col("c")))
-        ).alias("sw"),
-    )
-    nt = F.col("n") - 2 * F.floor(F.col("n") / 10)
-    return (
-        agg.filter(F.col("n") >= 20)
-        .select(
-            "cell",
-            "n",
-            F.round(F.col("sc") / F.col("n") / 100.0, 6).alias("mean"),
-            F.round(F.col("st") / nt / 100.0, 6).alias("trimmed"),
-            F.round(F.col("sw") / F.col("n") / 100.0, 6).alias("winsorized"),
-        )
-        .orderBy(
-            F.desc(F.abs(F.col("mean") - F.col("trimmed"))), "cell"
-        )
-        .limit(10)
-    )
-
-
-def _trimmed_means_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH vals AS (
-            SELECT {cell} AS cell,
-                   CAST(ROUND(value * 100) AS BIGINT) AS c
-            FROM events),
-        ranked AS (
-            SELECT cell, c,
-                   ROW_NUMBER() OVER (PARTITION BY cell ORDER BY c) AS rn,
-                   COUNT(*) OVER (PARTITION BY cell) AS n
-            FROM vals),
-        bounds AS (
-            SELECT cell, MAX(n) AS n,
-                   MAX(CASE WHEN rn = n // 10 + 1 THEN c END) AS lo,
-                   MAX(CASE WHEN rn = n - n // 10 THEN c END) AS hi
-            FROM ranked GROUP BY 1),
-        agg AS (
-            SELECT r.cell, MAX(r.n) AS n,
-                   CAST(SUM(r.c) AS BIGINT) AS sc,
-                   CAST(SUM(CASE WHEN r.rn > r.n // 10
-                                  AND r.rn <= r.n - r.n // 10
-                            THEN r.c ELSE 0 END) AS BIGINT) AS st,
-                   CAST(SUM(GREATEST(b.lo, LEAST(b.hi, r.c))) AS BIGINT) AS sw
-            FROM ranked r JOIN bounds b USING (cell)
-            GROUP BY 1)
-        SELECT cell, n,
-               ROUND(sc / CAST(n AS DOUBLE) / 100.0, 6) AS mean,
-               ROUND(st / CAST(n - 2 * (n // 10) AS DOUBLE) / 100.0, 6)
-                   AS trimmed,
-               ROUND(sw / CAST(n AS DOUBLE) / 100.0, 6) AS winsorized
-        FROM agg
-        WHERE n >= 20
-        ORDER BY ABS(sc / CAST(n AS DOUBLE) / 100.0
-                     - st / CAST(n - 2 * (n // 10) AS DOUBLE) / 100.0) DESC,
-                 cell
-        LIMIT 10
-    """
-
-
-# ---------------------------------------------------------------------------
-# Nelson-Aalen cumulative hazard (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_nelson_aalen(spark, sf_dir):
-    """Nelson-Aalen cumulative hazard H(t) = Σ_{s≤t} d_s/n_s for
-    time-to-first-purchase — the hazard-scale twin of the
-    survival-scale `kaplan_meier` (K-M multiplies survival, N-A sums
-    hazard; exp(−H) vs the K-M curve is the classic diagnostic), sharing
-    `cox_ph`'s exact integer risk table. Per-time terms are exact-ratio
-    floats 9-dp pre-rounded; the cumulation is ONE ordered window over
-    O(distinct times). Output: the full (t, d, n, H) curve."""
-    from pyspark.sql import Window
-
-    risk = _cox_risk_table(spark, sf_dir)
-    d = F.col("d0") + F.col("d1")
-    n = F.col("n0") + F.col("n1")
-    term = F.round(d / n.cast("double"), 9)
-    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    return (
-        risk.select("t", d.alias("d"), n.alias("n"), term.alias("h_term"))
-        .withColumn("h", F.round(F.sum("h_term").over(w), 6))
-        .select("t", "d", "n", "h")
-        .orderBy("t")
-    )
-
-
-def _nelson_aalen_sql() -> str:
-    risk = _cox_ph_sql().split("b0 AS")[0].rstrip().rstrip(",")
-    return f"""
-        {risk}
-        SELECT t, CAST(d0 + d1 AS BIGINT) AS d,
-               CAST(n0 + n1 AS BIGINT) AS n,
-               ROUND(SUM(ROUND((d0 + d1) / CAST(n0 + n1 AS DOUBLE), 9))
-                     OVER (ORDER BY t ROWS UNBOUNDED PRECEDING), 6) AS h
-        FROM risk
-        ORDER BY t
-    """
-
-
-# ---------------------------------------------------------------------------
-# A/B power analysis (session 13)
-# ---------------------------------------------------------------------------
-
-_PW_TAIL = (
-    "POW(1.959964 * SQRT(2 * pbar * (1 - pbar)) "
-    "+ 0.841621 * SQRT(p1 * (1 - p1) + p2 * (1 - p2)), 2) "
-    "/ POW(p2 - p1, 2)"
-)
-
-
-def q_power_analysis(spark, sf_dir):
-    """Two-proportion sample-size calculation seeded from the observed
-    data: baseline p1 = the measured purchase rate, target p2 = a 10%
-    relative lift, n per arm for α = 0.05 (two-sided) / power = 0.8 —
-    the experiment-DESIGN member that closes the A/B family
-    (`ab_proportions` tests, `cuped_adjustment` tightens, `sprt_monitor`
-    sequences, THIS sizes). z quantiles are pinned literals; p1 is an
-    exact integer ratio; one shared scalar tail.
-
-    Scale shape: one 1-row agg over events."""
-    agg = _read(spark, sf_dir, "events").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("event_type") == "purchase").cast("long")).alias("k"),
-    )
-    base = agg.select(
-        "n",
-        "k",
-        F.round(F.col("k") / F.col("n").cast("double"), 9).alias("p1"),
-    ).select(
-        "n",
-        "k",
-        "p1",
-        F.round(F.col("p1") * 1.1, 9).alias("p2"),
-    ).select(
-        "n", "k", "p1", "p2", F.round((F.col("p1") + F.col("p2")) / 2, 9).alias("pbar")
-    )
-    return base.select(
-        "n",
-        "p1",
-        "p2",
-        F.ceil(F.expr(_PW_TAIL)).cast("long").alias("n_per_arm"),
-    )
-
-
-def _power_analysis_sql() -> str:
-    return f"""
-        WITH agg AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN event_type = 'purchase'
-                            THEN 1 ELSE 0 END) AS BIGINT) AS k
-            FROM events),
-        base AS (
-            SELECT n, k, p1,
-                   ROUND(p1 * 1.1, 9) AS p2,
-                   ROUND((p1 + ROUND(p1 * 1.1, 9)) / 2, 9) AS pbar
-            FROM (SELECT n, k,
-                         ROUND(k / CAST(n AS DOUBLE), 9) AS p1
-                  FROM agg))
-        SELECT n, p1, p2,
-               CAST(CEIL({_PW_TAIL}) AS BIGINT) AS n_per_arm
-        FROM base
-    """
-
-
-# ---------------------------------------------------------------------------
-# raster cross-tabulation (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_raster_crosstab(spark, sf_dir):
-    """Map-algebra COMBINE: cross-tabulation of the document and event
-    density rasters at res 4 — each surface classified 0/1/2 (empty /
-    at-or-below its own occupied mean / above, boundaries as exact
-    integer cross-multiplications, the spatial_markov discipline), then
-    the 3×3 joint histogram — 'where do the two layers agree', the
-    change-detection / layer-overlay primitive beside `bivariate_moran`
-    (which correlates instead of tabulating). All-integer.
-
-    Scale shape: two point aggs + a full-outer cell join + one 9-row
-    agg."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    dlat, dlng = _latlng_cols(F.col("doc_id"))
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    elat, elng = _latlng_cols(F.col("event_id"))
-    dc = d.groupBy(cell_encode_col(dlat, dlng, 4).alias("cell")).agg(
-        F.count(F.lit(1)).alias("xd")
-    )
-    ec = ev.groupBy(cell_encode_col(elat, elng, 4).alias("cell")).agg(
-        F.count(F.lit(1)).alias("xe")
-    )
-    joined = (
-        dc.join(ec, "cell", "full_outer")
-        .select(
-            "cell",
-            F.coalesce("xd", F.lit(0)).alias("xd"),
-            F.coalesce("xe", F.lit(0)).alias("xe"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    tots = joined.agg(
-        F.sum("xd").alias("sd"),
-        F.sum((F.col("xd") > 0).cast("long")).alias("nd"),
-        F.sum("xe").alias("se"),
-        F.sum((F.col("xe") > 0).cast("long")).alias("ne"),
-    )
-    j = joined.crossJoin(tots)
-    cls_d = (
-        F.when(F.col("xd") == 0, 0)
-        .when(F.col("xd") * F.col("nd") <= F.col("sd"), 1)
-        .otherwise(2)
-    )
-    cls_e = (
-        F.when(F.col("xe") == 0, 0)
-        .when(F.col("xe") * F.col("ne") <= F.col("se"), 1)
-        .otherwise(2)
-    )
-    return (
-        j.select(cls_d.alias("doc_cls"), cls_e.alias("ev_cls"))
-        .groupBy("doc_cls", "ev_cls")
-        .agg(F.count(F.lit(1)).alias("n_cells"))
-        .orderBy("doc_cls", "ev_cls")
-    )
-
-
-def _raster_crosstab_sql() -> str:
-    dlat, dlng = _latlng_sql("doc_id")
-    elat, elng = _latlng_sql("event_id")
-    dcell = cell_encode_sql(dlat, dlng, 4)
-    ecell = cell_encode_sql(elat, elng, 4)
-    return f"""
-        WITH dc AS (SELECT {dcell} AS cell, CAST(COUNT(*) AS BIGINT) AS xd
-                    FROM documents GROUP BY 1),
-        ec AS (SELECT {ecell} AS cell, CAST(COUNT(*) AS BIGINT) AS xe
-               FROM events GROUP BY 1),
-        joined AS MATERIALIZED (
-            SELECT COALESCE(dc.cell, ec.cell) AS cell,
-                   COALESCE(xd, 0) AS xd, COALESCE(xe, 0) AS xe
-            FROM dc FULL OUTER JOIN ec ON dc.cell = ec.cell),
-        tots AS (SELECT CAST(SUM(xd) AS BIGINT) AS sd,
-                        CAST(SUM(CASE WHEN xd > 0 THEN 1 ELSE 0 END) AS BIGINT) AS nd,
-                        CAST(SUM(xe) AS BIGINT) AS se,
-                        CAST(SUM(CASE WHEN xe > 0 THEN 1 ELSE 0 END) AS BIGINT) AS ne
-                 FROM joined)
-        SELECT CASE WHEN xd = 0 THEN 0
-                    WHEN xd * nd <= sd THEN 1 ELSE 2 END AS doc_cls,
-               CASE WHEN xe = 0 THEN 0
-                    WHEN xe * ne <= se THEN 1 ELSE 2 END AS ev_cls,
-               CAST(COUNT(*) AS BIGINT) AS n_cells
-        FROM joined CROSS JOIN tots
-        GROUP BY 1, 2 ORDER BY 1, 2
-    """
-
-
-# ---------------------------------------------------------------------------
-# focal mode filter (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_focal_mode(spark, sf_dir):
-    """Categorical focal-mode (majority) filter: each res-5 cell's
-    dominant event type (argmax count, tie → lexicographically first),
-    then the 3×3-ring MODE of those dominants (same tie rule) — the
-    categorical-raster smoother every land-cover pipeline runs (the
-    categorical sibling of `cell_kring_smooth`'s numeric mean). Output:
-    per smoothed class, cell count + how many cells the filter FLIPPED.
-    All-integer/string — exact.
-
-    Scale shape: one (cell, type) agg, two argmax windows (cell-sized),
-    one literal ring join."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    ct = ev.groupBy(
-        cell_encode_col(lat, lng, 5).alias("cell"), "event_type"
-    ).agg(F.count(F.lit(1)).alias("c"))
-    w1 = Window.partitionBy("cell").orderBy(F.desc("c"), "event_type")
-    dom = (
-        ct.withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") == 1)
-        .select("cell", F.col("event_type").alias("dom"))
-        .localCheckpoint(eager=True)
-    )
-    nbrs = F.array(
-        *[kring_neighbor_col("cell", 5, dx, dy) for dx, dy in _offsets(1)]
-    )
-    ring = (
-        dom.select("cell", "dom", F.explode(F.filter(nbrs, lambda c: c.isNotNull())).alias("nbr"))
-        .join(dom.select(F.col("cell").alias("nbr"), F.col("dom").alias("ndom")), "nbr")
-        .groupBy("cell", "dom", "ndom")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    w2 = Window.partitionBy("cell").orderBy(F.desc("c"), "ndom")
-    sm = (
-        ring.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") == 1)
-        .select("cell", "dom", F.col("ndom").alias("smoothed"))
-    )
-    return (
-        sm.groupBy("smoothed")
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum((F.col("dom") != F.col("smoothed")).cast("long")).alias(
-                "n_flipped"
-            ),
-        )
-        .orderBy("smoothed")
-    )
-
-
-def _focal_mode_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 5)
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in _offsets(1))
-    nbr = kring_neighbor_sql("d.cell", 5, "v.dx", "v.dy")
-    return f"""
-        WITH ct AS (
-            SELECT {cell} AS cell, event_type, COUNT(*) AS c
-            FROM events GROUP BY 1, 2),
-        dom AS MATERIALIZED (
-            SELECT cell, event_type AS dom FROM (
-                SELECT cell, event_type,
-                       ROW_NUMBER() OVER (PARTITION BY cell
-                                          ORDER BY c DESC, event_type) AS rn
-                FROM ct) WHERE rn = 1),
-        ring AS (
-            SELECT d.cell, d.dom, q.dom AS ndom, COUNT(*) AS c
-            FROM dom d CROSS JOIN (VALUES {offs}) v(dx, dy)
-            JOIN dom q ON q.cell = {nbr}
-            GROUP BY 1, 2, 3),
-        sm AS (
-            SELECT cell, dom, ndom AS smoothed FROM (
-                SELECT cell, dom, ndom,
-                       ROW_NUMBER() OVER (PARTITION BY cell
-                                          ORDER BY c DESC, ndom) AS rn
-                FROM ring) WHERE rn = 1)
-        SELECT smoothed,
-               CAST(COUNT(*) AS BIGINT) AS n_cells,
-               CAST(SUM(CASE WHEN dom != smoothed THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_flipped
-        FROM sm GROUP BY 1 ORDER BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# cost allocation / service areas (session 13)
-# ---------------------------------------------------------------------------
-
-_CA_ROUNDS2 = 6
-
-
-def q_cost_allocation(spark, sf_dir):
-    """Cost allocation (ESRI's COSTALLOCATION): multi-source Bellman-Ford
-    over the occupied res-5 doc lattice — every reachable cell is labeled
-    by WHICH of the 5 busiest cells (the 'facilities') reaches it at the
-    lowest congestion cost (cost = 1 + doc count, an exact integer; tie →
-    lowest facility cell id) — the service-area partition `cell_sssp`
-    (single source) and `nearest_doc_assignment` (straight-line) don't
-    give. 6 fixed relaxation rounds; per round one join + one
-    struct-min agg; the oracle unrolls identical rounds. Output: per
-    facility, allocated cells + total/max cost."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = (
-        d.groupBy(cell_encode_col(lat, lng, 5).alias("cell"))
-        .agg((F.lit(1) + F.count(F.lit(1))).alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    seeds = (
-        occ.orderBy(F.desc("w"), "cell")
-        .limit(5)
-        .select("cell", F.col("cell").alias("lab"))
-        .localCheckpoint(eager=True)
-    )
-    ring = [o for o in _offsets(1) if o != (0, 0)]
-    nbrs = F.array(
-        *[kring_neighbor_col("cell", 5, dx, dy) for dx, dy in ring]
-    )
-    edges = (
-        occ.select(F.col("cell").alias("src"), F.explode(F.filter(nbrs, lambda c: c.isNotNull())).alias("dst"))
-        .join(occ.select(F.col("cell").alias("dst"), F.col("w").alias("wd")), "dst")
-        .localCheckpoint(eager=True)
-    )
-    state = seeds.select(
-        "cell", F.lit(0).cast("long").alias("dist"), "lab"
-    ).localCheckpoint(eager=True)
-    for _ in range(_CA_ROUNDS2):
-        relax = state.join(edges, state.cell == edges.src).select(
-            F.col("dst").alias("cell"),
-            (F.col("dist") + F.col("wd")).alias("dist"),
-            "lab",
-        )
-        state = (
-            state.unionByName(relax)
-            .groupBy("cell")
-            .agg(F.min(F.struct("dist", "lab")).alias("b"))
-            .select("cell", F.col("b.dist").alias("dist"), F.col("b.lab").alias("lab"))
-            .localCheckpoint(eager=True)
-        )
-    return (
-        state.groupBy("lab")
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("dist").alias("total_cost"),
-            F.max("dist").alias("max_cost"),
-        )
-        .orderBy("lab")
-    )
-
-
-def _cost_allocation_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 5)
-    ring = [o for o in _offsets(1) if o != (0, 0)]
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in ring)
-    nbr = kring_neighbor_sql("o.cell", 5, "v.dx", "v.dy")
-    steps = []
-    prev = "s0"
-    for r in range(1, _CA_ROUNDS2 + 1):
-        steps.append(
-            f"""u{r} AS (
-            SELECT cell, dist, lab FROM {prev}
-            UNION ALL
-            SELECT e.dst, s.dist + e.wd, s.lab
-            FROM {prev} s JOIN e ON e.src = s.cell),
-        s{r} AS MATERIALIZED (
-            SELECT cell, dist, lab FROM (
-                SELECT cell, dist, lab,
-                       ROW_NUMBER() OVER (PARTITION BY cell
-                                          ORDER BY dist, lab) AS rn
-                FROM u{r}) WHERE rn = 1)"""
-        )
-        prev = f"s{r}"
-    chain = ",\n        ".join(steps)
-    return f"""
-        WITH occ AS MATERIALIZED (
-            SELECT {cell} AS cell, 1 + COUNT(*) AS w
-            FROM documents GROUP BY 1),
-        seeds AS (SELECT cell, cell AS lab FROM occ
-                  ORDER BY w DESC, cell LIMIT 5),
-        e AS MATERIALIZED (
-            SELECT o.cell AS src, q.cell AS dst, q.w AS wd
-            FROM occ o CROSS JOIN (VALUES {offs}) v(dx, dy)
-            JOIN occ q ON q.cell = {nbr}),
-        s0 AS (SELECT cell, CAST(0 AS BIGINT) AS dist, lab FROM seeds),
-        {chain}
-        SELECT lab, CAST(COUNT(*) AS BIGINT) AS n_cells,
-               CAST(SUM(dist) AS BIGINT) AS total_cost,
-               CAST(MAX(dist) AS BIGINT) AS max_cost
-        FROM {prev}
-        GROUP BY 1 ORDER BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# terrain ruggedness index (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_ruggedness_index(spark, sf_dir):
-    """Terrain Ruggedness Index (Riley 1999) on the res-6 event-count
-    elevation model: TRI(c) = Σ_{8 ring} |z_c − z_nbr| with unoccupied
-    in-lattice neighbors at elevation 0 (the d8_flow_dirs convention) —
-    the roughness complement to `density_gradient` (which signs the
-    slope; TRI measures total relief). All-integer. Top-15 most rugged
-    cells with their elevation and occupied-neighbor count."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    raster = (
-        ev.groupBy(cell_encode_col(lat, lng, _D8_RES).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("z"))
-        .localCheckpoint(eager=True)
-    )
-    ring = [o for o in _offsets(1) if o != (0, 0)]
-    nbrs = F.array(
-        *[kring_neighbor_col("cell", _D8_RES, dx, dy) for dx, dy in ring]
-    )
-    ex = (
-        raster.select("cell", "z", F.explode(F.filter(nbrs, lambda c: c.isNotNull())).alias("nbr"))
-        .join(
-            raster.select(F.col("cell").alias("nbr"), F.col("z").alias("zn")),
-            "nbr",
-            "left",
-        )
-    )
-    return (
-        ex.groupBy("cell")
-        .agg(
-            F.max("z").alias("z"),
-            F.sum(F.abs(F.col("z") - F.coalesce("zn", F.lit(0)))).alias("tri"),
-            F.sum(F.col("zn").isNotNull().cast("long")).alias("n_occ_nbrs"),
-        )
-        .orderBy(F.desc("tri"), "cell")
-        .limit(15)
-    )
-
-
-def _ruggedness_index_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, _D8_RES)
-    ring = [o for o in _offsets(1) if o != (0, 0)]
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in ring)
-    nbr = kring_neighbor_sql("r.cell", _D8_RES, "v.dx", "v.dy")
-    return f"""
-        WITH r AS MATERIALIZED (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS z
-            FROM events GROUP BY 1),
-        ex AS (
-            SELECT r.cell, r.z, q.z AS zn
-            FROM r CROSS JOIN (VALUES {offs}) v(dx, dy)
-            LEFT JOIN r q ON q.cell = {nbr}
-            WHERE {nbr} IS NOT NULL)
-        SELECT cell, MAX(z) AS z,
-               CAST(SUM(ABS(z - COALESCE(zn, 0))) AS BIGINT) AS tri,
-               CAST(SUM(CASE WHEN zn IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_occ_nbrs
-        FROM ex
-        GROUP BY 1
-        ORDER BY tri DESC, cell LIMIT 15
-    """
-
-
-# ---------------------------------------------------------------------------
-# UCB1 bandit replay (session 13)
-# ---------------------------------------------------------------------------
-
-_UCB_ARMS = 5  # the five event types, alphabetical
-
-
-def _ucb_step(dialect: str) -> str:
-    """One UCB1 day as a single fold expression, generated for both
-    engines (the LRU/SPRT/Croston technique). State (DOUBLE list) =
-    [t, n_1..5, s_1..5]; element = the 5 arm rewards of the day. The
-    chosen arm maximizes ROUND(mean + sqrt(2 ln t / n), 9) with
-    untried arms (n = 0) forced first (lowest index first); ROUND
-    pins the argmax cross-engine."""
-    import math  # noqa: F401  (documented: ln stays in-engine)
-
-    if dialect == "spark":
-        el = lambda i: f"element_at(el, {i})"
-        st = lambda i: f"element_at(acc, {i})"
-        arr = "array"
-    else:
-        el = lambda i: f"el[{i}]"
-        st = lambda i: f"acc[{i}]"
-        arr = "list_value"
-    t = st(1)
-    ucb = [
-        f"(CASE WHEN {st(1 + a)} = 0 THEN 1e18 - {a} "
-        f"ELSE ROUND({st(6 + a)} / {st(1 + a)} "
-        f"+ SQRT(2 * LN({t} + 1.0) / {st(1 + a)}), 9) END)"
-        for a in range(1, _UCB_ARMS + 1)
-    ]
-    best = " ".join(
-        "WHEN "
-        + " AND ".join(
-            f"{ucb[a - 1]} >= {ucb[b - 1]}"
-            for b in range(1, _UCB_ARMS + 1)
-            if b != a
-        )
-        + f" THEN {a}"
-        for a in range(1, _UCB_ARMS)
-    )
-    pick = f"(CASE {best} ELSE {_UCB_ARMS} END)"
-    news = ", ".join(
-        f"CASE WHEN {pick} = {a} THEN {st(1 + a)} + 1.0 ELSE {st(1 + a)} END"
-        for a in range(1, _UCB_ARMS + 1)
-    )
-    newr = ", ".join(
-        f"CASE WHEN {pick} = {a} THEN {st(6 + a)} + {el(a)} ELSE {st(6 + a)} END"
-        for a in range(1, _UCB_ARMS + 1)
-    )
-    return f"{arr}({t} + 1.0, {news}, {newr})"
-
-
-def q_ucb_replay(spark, sf_dir):
-    """UCB1 bandit replay (Auer 2002) over the daily event-type arms:
-    each day the policy 'plays' the type with the highest upper
-    confidence bound; the reward is that type's ACTUAL purchase-free
-    conversion proxy for the day (its share of the day's events, an
-    exact count ratio pre-rounded 6 dp) — the counterfactual
-    decision-replay primitive of every recommender/exploration stack
-    (which arm would UCB have settled on, and how fast). The entire
-    30-day replay is ONE ordered array fold (state = [t, n_a.., s_a..],
-    step generated once for both engines — `_ucb_step`); ties and
-    argmax pinned by 9-dp rounding + lowest-index preference. Output:
-    per arm, plays and accumulated reward."""
-    types = ["click", "error", "purchase", "signup", "view"]
-    ev = _read(spark, sf_dir, "events").select("ts", "event_type")
-    day = F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-    per = (
-        ev.groupBy(day.alias("day"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            *[
-                F.sum((F.col("event_type") == t).cast("long")).alias(f"c{i}")
-                for i, t in enumerate(types)
-            ],
-        )
-        .select(
-            "day",
-            F.array(
-                *[
-                    F.round(F.col(f"c{i}") / F.col("n").cast("double"), 6)
-                    for i in range(len(types))
-                ]
-            ).alias("r"),
-        )
-    )
-    series = per.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "r"))), lambda s: s["r"]
-        ).alias("days")
-    )
-    init = ", ".join(["0.0D"] * (1 + 2 * _UCB_ARMS))
-    folded = series.withColumn(
-        "res",
-        F.expr(
-            f"aggregate(days, array({init}), (acc, el) -> {_ucb_step('spark')})"
-        ),
-    )
-    rows = None
-    for a in range(1, _UCB_ARMS + 1):
-        leg = folded.select(
-            F.lit(types[a - 1]).alias("arm"),
-            F.element_at("res", 1 + a).cast("long").alias("plays"),
-            F.round(F.element_at("res", 6 + a), 6).alias("reward"),
-        )
-        rows = leg if rows is None else rows.unionByName(leg)
-    return rows.orderBy("arm")
-
-
-def _ucb_replay_sql() -> str:
-    types = ["click", "error", "purchase", "signup", "view"]
-    cs = ", ".join(
-        f"SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END) AS c{i}"
-        for i, t in enumerate(types)
-    )
-    rs = ", ".join(
-        f"ROUND(c{i} / CAST(n AS DOUBLE), 6)" for i in range(len(types))
-    )
-    init = ", ".join(["0.0"] * (1 + 2 * _UCB_ARMS))
-    legs = " UNION ALL ".join(
-        f"SELECT '{types[a - 1]}' AS arm, CAST(res[{1 + a}] AS BIGINT) AS plays, "
-        f"ROUND(res[{6 + a}], 6) AS reward FROM folded"
-        for a in range(1, _UCB_ARMS + 1)
-    )
-    return f"""
-        WITH per AS (
-            SELECT day, [{rs}] AS r FROM (
-                SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                       COUNT(*) AS n, {cs}
-                FROM events GROUP BY 1)),
-        series AS (
-            SELECT list_transform(list_sort(list(struct_pack(day := day,
-                                                             r := r))),
-                                  s -> s.r) AS days
-            FROM per),
-        folded AS (
-            SELECT list_reduce(list_prepend([{init}], days),
-                               (acc, el) -> {_ucb_step('duckdb')}) AS res
-            FROM series)
-        SELECT * FROM ({legs}) ORDER BY arm
-    """
-
-
-# ---------------------------------------------------------------------------
-# shape compactness (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_shape_compactness(spark, sf_dir):
-    """Polsby-Popper compactness of the equal-density raster segments:
-    4πA/P² with A = cell count and P = exposed cell-edge count (a
-    4-neighbor edge whose other side is OUTSIDE the segment — off-grid,
-    unoccupied, or a different segment) — the gerrymandering/patch-shape
-    metric downstream of the same Borůvka labeling as
-    `cell_segmentation`/`effective_mesh`. A and P are exact integers.
-    Top-10 largest segments with their compactness.
-
-    Scale shape: the component labeling + one literal 4-offset explode
-    + one left join + segment-sized aggs."""
-    from raptor_service_spark.operators.mst import cell_edges, graph_components
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_col
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    pts = d.select(lat.alias("lat"), lng.alias("lng"))
-    nodes = (
-        pts.select(
-            cell_encode_col(F.col("lat"), F.col("lng"), _SEG_RES).alias("cell")
-        )
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    edges = cell_edges(pts, _SEG_RES).filter(F.col("w") <= _SEG_MAXW)
-    comps = graph_components(edges, rounds=_MST_ROUNDS, nodes=nodes).localCheckpoint(
-        eager=True
-    )
-    four = [(1, 0), (-1, 0), (0, 1), (0, -1)]
-    arms = F.array(
-        *[kring_neighbor_col("cell", _SEG_RES, dx, dy) for dx, dy in four]
-    )
-    sides = comps.select(
-        "cell", "comp", F.explode(arms).alias("nbr")
-    ).join(
-        comps.select(F.col("cell").alias("nbr"), F.col("comp").alias("ncomp")),
-        "nbr",
-        "left",
-    )
-    per = sides.groupBy("comp").agg(
-        (F.count(F.lit(1)) / 4).cast("long").alias("area"),
-        F.sum(
-            (
-                F.col("nbr").isNull()
-                | F.col("ncomp").isNull()
-                | (F.col("ncomp") != F.col("comp"))
-            ).cast("long")
-        ).alias("perimeter"),
-    )
-    return (
-        per.select(
-            F.col("comp").alias("segment"),
-            "area",
-            "perimeter",
-            F.round(
-                F.lit(4.0 * 3.141592653589793)
-                * F.col("area")
-                / (F.col("perimeter") * F.col("perimeter")).cast("double"),
-                6,
-            ).alias("compactness"),
-        )
-        .orderBy(F.desc("area"), "segment")
-        .limit(10)
-    )
-
-
-def _shape_compactness_sql() -> str:
-    from raptor_service_spark.operators.mst import boruvka_mst_sql
-    from raptor_service_spark.operators.neighborhood import kring_neighbor_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    comps = boruvka_mst_sql(
-        f"SELECT {lat} AS lat, {lng} AS lng FROM documents",
-        _SEG_RES,
-        rounds=_MST_ROUNDS,
-        jumps=_MST_JUMPS,
-        max_w=_SEG_MAXW,
-        final="components",
-    )
-    four = ", ".join(f"({dx}, {dy})" for dx, dy in [(1, 0), (-1, 0), (0, 1), (0, -1)])
-    nbr = kring_neighbor_sql("c.cell", _SEG_RES, "v.dx", "v.dy")
-    return f"""
-        WITH comps AS MATERIALIZED (SELECT * FROM ({comps})),
-        sides AS (
-            SELECT c.cell, c.comp, {nbr} AS nbr, q.comp AS ncomp
-            FROM comps c CROSS JOIN (VALUES {four}) v(dx, dy)
-            LEFT JOIN comps q ON q.cell = {nbr}),
-        per AS (
-            SELECT comp,
-                   CAST(COUNT(*) / 4 AS BIGINT) AS area,
-                   CAST(SUM(CASE WHEN nbr IS NULL OR ncomp IS NULL
-                                  OR ncomp != comp
-                            THEN 1 ELSE 0 END) AS BIGINT) AS perimeter
-            FROM sides GROUP BY 1)
-        SELECT comp AS segment, area, perimeter,
-               ROUND({4.0 * 3.141592653589793!r} * area
-                     / CAST(perimeter * perimeter AS DOUBLE), 6) AS compactness
-        FROM per
-        ORDER BY area DESC, segment LIMIT 10
-    """
-
-
-# ---------------------------------------------------------------------------
-# recurrence quantification (session 13)
-# ---------------------------------------------------------------------------
-
-_RQA_EPS = 0  # exact-recurrence threshold on integer daily counts
-
-
-def q_recurrence_quant(spark, sf_dir):
-    """Recurrence quantification analysis of the daily purchase-count
-    series: the recurrence matrix R(i,j) = [|x_i − x_j| ≤ ε] (ε on
-    integer counts — exact), recurrence rate RR, determinism DET (share
-    of recurrent pairs lying on diagonal lines of length ≥ 2, i.e.
-    R(i,j) ∧ R(i+1,j+1)), and laminarity proxy LAM (vertical pairs) —
-    the nonlinear-dynamics view of regularity the linear `hourly_acf`
-    misses. All-integer counts; two exact ratios.
-
-    Scale shape: the series is O(days) — the pair table is a CONSTANT
-    30² join at any data size."""
-    days = (
-        _read(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .groupBy(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    from pyspark.sql import Window
-
-    idx = days.select(
-        F.row_number().over(Window.orderBy("day")).alias("i"),
-        "x",
-    ).localCheckpoint(eager=True)
-    a, b = idx.alias("a"), idx.alias("b")
-    rec = (
-        a.join(b, F.col("a.i") != F.col("b.i"))
-        .filter(F.abs(F.col("a.x") - F.col("b.x")) <= _RQA_EPS)
-        .select(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
-        .localCheckpoint(eager=True)
-    )
-    n = idx.count()
-    total = rec.count()
-    diag = (
-        rec.alias("r1")
-        .join(
-            rec.alias("r2"),
-            (F.col("r2.i") == F.col("r1.i") + 1) & (F.col("r2.j") == F.col("r1.j") + 1),
-        )
-        .count()
-    )
-    vert = (
-        rec.alias("r1")
-        .join(
-            rec.alias("r2"),
-            (F.col("r2.i") == F.col("r1.i")) & (F.col("r2.j") == F.col("r1.j") + 1),
-        )
-        .count()
-    )
-    return spark.createDataFrame(
-        [
-            (
-                int(n),
-                int(total),
-                float(_round_half_up(total / (n * (n - 1)), 6)),
-                float(_round_half_up(diag / total, 6)) if total else 0.0,
-                float(_round_half_up(vert / total, 6)) if total else 0.0,
-            )
-        ],
-        "n_days long, n_recurrent long, rr double, det double, lam double",
-    )
-
-
-def _recurrence_quant_sql() -> str:
-    return f"""
-        WITH days AS (
-            SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events WHERE event_type = 'purchase'
-            GROUP BY 1),
-        idx AS MATERIALIZED (
-            SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, x FROM days),
-        rec AS MATERIALIZED (
-            SELECT a.i, b.i AS j
-            FROM idx a JOIN idx b ON a.i != b.i
-            WHERE ABS(a.x - b.x) <= {_RQA_EPS}),
-        nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM idx),
-        tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM rec),
-        diag AS (SELECT CAST(COUNT(*) AS BIGINT) AS d
-                 FROM rec r1 JOIN rec r2
-                   ON r2.i = r1.i + 1 AND r2.j = r1.j + 1),
-        vert AS (SELECT CAST(COUNT(*) AS BIGINT) AS v
-                 FROM rec r1 JOIN rec r2
-                   ON r2.i = r1.i AND r2.j = r1.j + 1)
-        SELECT n AS n_days, t AS n_recurrent,
-               ROUND(t / CAST(n * (n - 1) AS DOUBLE), 6) AS rr,
-               CASE WHEN t > 0 THEN ROUND(d / CAST(t AS DOUBLE), 6)
-                    ELSE 0.0 END AS det,
-               CASE WHEN t > 0 THEN ROUND(v / CAST(t AS DOUBLE), 6)
-                    ELSE 0.0 END AS lam
-        FROM nn CROSS JOIN tot CROSS JOIN diag CROSS JOIN vert
-    """
-
-
-# ---------------------------------------------------------------------------
-# Allan variance (session 13)
-# ---------------------------------------------------------------------------
-
-_AV_TAUS = (1, 2, 4, 8)
-
-
-def q_allan_variance(spark, sf_dir):
-    """Allan variance of the hourly event-rate series at τ ∈ {1,2,4,8}
-    hours: σ²(τ) = ½·mean[(m̄_{k+1} − m̄_k)²] over non-overlapping
-    τ-blocks — the clock-stability statistic that separates white noise
-    (slope −1) from drift (slope +1), which a plain variance can't.
-    Block means are exact integer ratios; squared diffs 9-dp pre-rounded.
-
-    Scale shape: one hour agg (dense-filled), then per-τ a block agg +
-    lag window over O(hours/τ) rows — all constant-size."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hrs0 = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    minh = hrs0.select(F.min("h").alias("minh"))
-    hrs = (
-        hrs0.crossJoin(minh)
-        .select(
-            F.floor(
-                (
-                    F.unix_micros(F.col("h").cast("timestamp"))
-                    - F.unix_micros(F.col("minh").cast("timestamp"))
-                )
-                / F.lit(3_600_000_000)
-            ).cast("long").alias("i"),
-            "x",
-        )
-        .localCheckpoint(eager=True)
-    )
-    span = hrs.agg(F.max("i").alias("mx")).collect()[0]["mx"]
-    dense = (
-        spark.range(0, int(span) + 1)
-        .select(F.col("id").alias("i"))
-        .join(hrs, "i", "left")
-        .select("i", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    out = None
-    for tau in _AV_TAUS:
-        blocks = (
-            dense.filter(F.col("i") < (int(span) + 1) // tau * tau)
-            .groupBy(F.floor(F.col("i") / tau).alias("k"))
-            .agg(F.sum("x").alias("s"))
-        )
-        w = Window.orderBy("k")
-        dif = (
-            blocks.select(
-                "k", (F.col("s") / F.lit(float(tau))).alias("m")
-            )
-            .withColumn("prev", F.lag("m").over(w))
-            .filter(F.col("prev").isNotNull())
-            .select(F.round(F.pow(F.col("m") - F.col("prev"), 2), 9).alias("d2"))
-        )
-        leg = dif.agg(
-            F.lit(tau).alias("tau"),
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.round(F.sum("d2") / (2 * F.count(F.lit(1))), 6).alias("avar"),
-        )
-        out = leg if out is None else out.unionByName(leg)
-    return out.orderBy("tau")
-
-
-def _allan_variance_sql() -> str:
-    legs = []
-    for tau in _AV_TAUS:
-        legs.append(
-            f"""SELECT {tau} AS tau,
-                   CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                   ROUND(SUM(d2) / (2 * COUNT(*)), 6) AS avar
-            FROM (SELECT ROUND(POW(m - LAG(m) OVER (ORDER BY k), 2), 9) AS d2
-                  FROM (SELECT CAST(FLOOR(i / {tau}) AS BIGINT) AS k,
-                               SUM(x) / {float(tau)!r} AS m
-                        FROM dense CROSS JOIN sp
-                        WHERE i < (sp.mx + 1) // {tau} * {tau}
-                        GROUP BY 1))
-            WHERE d2 IS NOT NULL"""
-        )
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH hrs AS (
-            SELECT CAST(date_diff('hour',
-                       (SELECT MIN(date_trunc('hour', ts)) FROM events),
-                       date_trunc('hour', ts)) AS BIGINT) AS i,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY date_trunc('hour', ts)),
-        dense AS MATERIALIZED (
-            SELECT g.i, COALESCE(h.x, 0) AS x
-            FROM (SELECT UNNEST(range(0, (SELECT MAX(i) + 1 FROM hrs))) AS i) g
-            LEFT JOIN hrs h USING (i)),
-        sp AS (SELECT CAST(MAX(i) AS BIGINT) AS mx FROM dense)
-        SELECT * FROM ({union}) ORDER BY tau
-    """
-
-
-# ---------------------------------------------------------------------------
-# OLS influence diagnostics (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_regression_influence(spark, sf_dir):
-    """Leverage and Cook's distance for the daily-trend OLS — WHICH days
-    drive the fitted line (the diagnostics layer over the same
-    regression `huber_irls` robustifies): h_i = 1/n + (x_i−x̄)²/Sxx,
-    D_i = r_i²·h_i/(p·s²·(1−h_i)²) with p = 2. All building blocks
-    (n, Σx, Σx², the OLS betas) come from exact integer sums; per-day
-    tails are scalar float expressions. Top-5 days by Cook's D.
-
-    Scale shape: one day agg + two 1-row aggs + an O(days) projection."""
-    days0 = (
-        _read(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").alias("d"))
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    mind = days0.select(F.min("d").alias("mind"))
-    days = (
-        days0.crossJoin(mind)
-        .select(
-            F.date_format("d", "yyyy-MM-dd").alias("day"),
-            F.datediff("d", "mind").cast("double").alias("x"),
-            F.col("y").cast("double").alias("y"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    s = days.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    ).collect()[0]
-    n = s["n"]
-    det = n * s["sxx"] - s["sx"] * s["sx"]
-    b0 = _round_half_up((s["sxx"] * s["sy"] - s["sx"] * s["sxy"]) / det, 9).item()
-    b1 = _round_half_up((n * s["sxy"] - s["sx"] * s["sy"]) / det, 9).item()
-    xbar = s["sx"] / n
-    sxx_c = s["sxx"] - s["sx"] * s["sx"] / n
-    resid = F.round(F.col("y") - (F.lit(b0) + F.lit(b1) * F.col("x")), 9)
-    sse = days.select(F.sum(F.round(resid * resid, 9)).alias("sse")).collect()[0][
-        "sse"
-    ]
-    s2 = _round_half_up(sse / (n - 2), 9).item()
-    h = F.round(
-        F.lit(1.0 / n)
-        + F.pow(F.col("x") - F.lit(xbar), 2) / F.lit(float(sxx_c)),
-        9,
-    )
-    cook = F.round(
-        resid * resid * h / (F.lit(2.0 * s2) * F.pow(F.lit(1.0) - h, 2)), 6
-    )
-    return (
-        days.select("day", h.alias("leverage"), cook.alias("cooks_d"))
-        .orderBy(F.desc("cooks_d"), "day")
-        .limit(5)
-    )
-
-
-def _regression_influence_sql() -> str:
-    return """
-        WITH days AS MATERIALIZED (
-            SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                   CAST(date_diff('day',
-                       (SELECT MIN(date_trunc('day', ts)) FROM events),
-                       date_trunc('day', ts)) AS DOUBLE) AS x,
-                   CAST(COUNT(*) AS DOUBLE) AS y
-            FROM events GROUP BY date_trunc('day', ts)),
-        s AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, SUM(x) AS sx,
-                     SUM(y) AS sy, SUM(x * x) AS sxx, SUM(x * y) AS sxy
-              FROM days),
-        fit AS (
-            SELECT n, sx / n AS xbar, sxx - sx * sx / n AS sxx_c,
-                   ROUND((sxx * sy - sx * sxy) / (n * sxx - sx * sx), 9) AS b0,
-                   ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 9) AS b1
-            FROM s),
-        res AS (
-            SELECT d.day, d.x, ROUND(d.y - (f.b0 + f.b1 * d.x), 9) AS r,
-                   f.n, f.xbar, f.sxx_c
-            FROM days d CROSS JOIN fit f),
-        sig AS (SELECT ROUND(SUM(ROUND(r * r, 9)) / (MAX(n) - 2), 9) AS s2
-                FROM res)
-        SELECT day,
-               ROUND(1.0 / n + POW(x - xbar, 2) / sxx_c, 9) AS leverage,
-               ROUND(r * r * ROUND(1.0 / n + POW(x - xbar, 2) / sxx_c, 9)
-                     / (2.0 * sig.s2
-                        * POW(1.0 - ROUND(1.0 / n + POW(x - xbar, 2)
-                                          / sxx_c, 9), 2)), 6) AS cooks_d
-        FROM res CROSS JOIN sig
-        ORDER BY cooks_d DESC, day LIMIT 5
-    """
-
-
-# ---------------------------------------------------------------------------
-# block entropies + entropy rate (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_block_entropy(spark, sf_dir):
-    """Block entropies H₁, H₂, H₃ of the per-user event-type sequence
-    and the conditional-entropy ladder h₂ = H₂−H₁, h₃ = H₃−H₂ — the
-    finite-order entropy-RATE estimate whose decay measures how much
-    memory the behavior stream carries (the symbolic-sequence member
-    beside `mobility_entropy_rate` (spatial) and `kn_bigram_lm`
-    (modeling)). Blocks from ONE user window carrying two leads;
-    probabilities exact count ratios; ln terms 9-dp pre-rounded.
-
-    Scale shape: one window + three count aggs."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tri = (
-        ev.select(
-            F.col("event_type").alias("e1"),
-            F.lead("event_type", 1).over(w).alias("e2"),
-            F.lead("event_type", 2).over(w).alias("e3"),
-        )
-        .filter(F.col("e3").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-
-    def _h(df, cols):
-        cnt = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("c"))
-        tot = cnt.agg(F.sum("c").alias("t"))
-        p = F.col("c") / F.col("t").cast("double")
-        return (
-            cnt.crossJoin(tot)
-            .agg(F.round(F.sum(F.round(-p * F.log(p), 9)), 9).alias("h"))
-            .collect()[0]["h"]
-        )
-
-    h1 = _h(tri, ["e1"])
-    h2 = _h(tri, ["e1", "e2"])
-    h3 = _h(tri, ["e1", "e2", "e3"])
-    return spark.createDataFrame(
-        [
-            (
-                float(_round_half_up(h1, 6)),
-                float(_round_half_up(h2, 6)),
-                float(_round_half_up(h3, 6)),
-                float(_round_half_up(h2 - h1, 6)),
-                float(_round_half_up(h3 - h2, 6)),
-            )
-        ],
-        "h1 double, h2 double, h3 double, rate2 double, rate3 double",
-    )
-
-
-def _block_entropy_sql() -> str:
-    def h(cols):
-        g = ", ".join(cols)
-        return f"""(SELECT ROUND(SUM(ROUND(-(CAST(c AS DOUBLE) / t)
-                                    * LN(CAST(c AS DOUBLE) / t), 9)), 9)
-            FROM (SELECT COUNT(*) AS c FROM tri GROUP BY {g})
-            CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM tri))"""
-
-    return f"""
-        WITH tri AS MATERIALIZED (
-            SELECT e1, e2, e3 FROM (
-                SELECT event_type AS e1,
-                       LEAD(event_type, 1) OVER (PARTITION BY user_id
-                           ORDER BY ts, event_id) AS e2,
-                       LEAD(event_type, 2) OVER (PARTITION BY user_id
-                           ORDER BY ts, event_id) AS e3
-                FROM events)
-            WHERE e3 IS NOT NULL),
-        hh AS (SELECT {h(['e1'])} AS h1, {h(['e1', 'e2'])} AS h2,
-                      {h(['e1', 'e2', 'e3'])} AS h3)
-        SELECT ROUND(h1, 6) AS h1, ROUND(h2, 6) AS h2, ROUND(h3, 6) AS h3,
-               ROUND(h2 - h1, 6) AS rate2, ROUND(h3 - h2, 6) AS rate3
-        FROM hh
-    """
-
-
-# ---------------------------------------------------------------------------
-# dyad census + reciprocity (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_dyad_census(spark, sf_dir):
-    """Holland-Leinhardt dyad census of the res-3 OD transition graph:
-    mutual / asymmetric / null dyad counts over all node pairs plus the
-    reciprocity ratio r = 2M/(2M+A) — the directed-structure summary
-    `degree_assortativity` (mixing) and `clustering_coeff` (triads)
-    don't give. All exact integers (null dyads by arithmetic:
-    C(n,2) − M − A, never materialized).
-
-    Scale shape: the distinct edge list + ONE self-join on the reversed
-    edge + O(1) arithmetic."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    e = (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell")))
-        .select(F.col("prev_cell").alias("src"), F.col("cell").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .count()
-    )
-    mutual = (
-        e.alias("a")
-        .join(
-            e.alias("b"),
-            (F.col("a.src") == F.col("b.dst")) & (F.col("a.dst") == F.col("b.src")),
-        )
-        .filter(F.col("a.src") < F.col("a.dst"))
-        .count()
-    )
-    n_edges = e.count()
-    asym = n_edges - 2 * mutual
-    total_dyads = nodes * (nodes - 1) // 2
-    null = total_dyads - mutual - asym
-    recip = 2 * mutual / (2 * mutual + asym) if (mutual or asym) else 0.0
-    return spark.createDataFrame(
-        [
-            (
-                int(nodes),
-                int(n_edges),
-                int(mutual),
-                int(asym),
-                int(null),
-                float(_round_half_up(recip, 6)),
-            )
-        ],
-        "n_nodes long, n_edges long, mutual long, asymmetric long, "
-        "null_dyads long, reciprocity double",
-    )
-
-
-def _dyad_census_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH e AS MATERIALIZED (
-            SELECT DISTINCT prev_cell AS src, cell AS dst
-            FROM (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                                               ORDER BY ts, event_id) AS prev_cell
-                  FROM (SELECT user_id, ts, event_id, {cell} AS cell FROM events))
-            WHERE prev_cell IS NOT NULL AND prev_cell != cell),
-        nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM
-                   (SELECT src AS v FROM e UNION SELECT dst FROM e)),
-        m AS (SELECT CAST(COUNT(*) AS BIGINT) AS mutual
-              FROM e a JOIN e b ON a.src = b.dst AND a.dst = b.src
-              WHERE a.src < a.dst),
-        ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges FROM e)
-        SELECT nn.n AS n_nodes, ne.n_edges, m.mutual,
-               ne.n_edges - 2 * m.mutual AS asymmetric,
-               nn.n * (nn.n - 1) // 2 - m.mutual
-                   - (ne.n_edges - 2 * m.mutual) AS null_dyads,
-               ROUND(2.0 * m.mutual
-                     / (2 * m.mutual + ne.n_edges - 2 * m.mutual), 6)
-                   AS reciprocity
-        FROM nn CROSS JOIN m CROSS JOIN ne
-    """
-
-
-# ---------------------------------------------------------------------------
-# Fano factor / overdispersion (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_fano_factor(spark, sf_dir):
-    """Fano factor (variance/mean of the hourly count series, dense
-    zeros included) per res-2 tile: > 1 = overdispersed (bursty
-    arrivals), ≈ 1 = Poisson — the dispersion diagnostic that says
-    whether `poisson_irls`-style count models are even admissible per
-    region (the per-tile sibling of `user_burstiness`). Sums exact
-    BIGINTs (counts and squared counts); one float tail. All tiles,
-    ordered by Fano desc.
-
-    Scale shape: one (cell, hour) agg; the dense hour grid is
-    cells × 720 — grid-bounded."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    ch = (
-        ev.groupBy(
-            cell_encode_col(lat, lng, 2).alias("cell"),
-            F.date_trunc("hour", "ts").alias("h"),
-        )
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    hours = ch.select("h").distinct()
-    n_hours = hours.count()
-    per = ch.groupBy("cell").agg(
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    n = F.lit(float(n_hours))
-    mean = F.col("sx") / n
-    var = (F.col("sxx") - F.col("sx") * F.col("sx") / n) / (n - 1)
-    return (
-        per.select(
-            "cell",
-            F.col("sx").alias("n_events"),
-            F.round(mean, 6).alias("mean"),
-            F.round(var / mean, 6).alias("fano"),
-        )
-        .orderBy(F.desc("fano"), "cell")
-    )
-
-
-def _fano_factor_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    return f"""
-        WITH ch AS MATERIALIZED (
-            SELECT {cell} AS cell, date_trunc('hour', ts) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-        nh AS (SELECT CAST(COUNT(DISTINCT h) AS DOUBLE) AS n FROM ch),
-        per AS (SELECT cell, CAST(SUM(x) AS BIGINT) AS sx,
-                       CAST(SUM(x * x) AS BIGINT) AS sxx
-                FROM ch GROUP BY 1)
-        SELECT cell, sx AS n_events,
-               ROUND(sx / n, 6) AS mean,
-               ROUND(((sxx - sx * CAST(sx AS DOUBLE) / n) / (n - 1))
-                     / (sx / n), 6) AS fano
-        FROM per CROSS JOIN nh
-        ORDER BY fano DESC, cell
-    """
-
-
-# ---------------------------------------------------------------------------
-# Kendall tau-b (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_kendall_tau(spark, sf_dir):
-    """Kendall τ-b between each res-3 cell's week-1 and week-2 event
-    volumes — the concordance-pair rank correlation beside
-    `spearman_corr` (rank-difference) with the PROPER tie correction
-    τ-b = (C−D)/√((C+D+Tx)(C+D+Ty)); measures ranking STABILITY of the
-    tile leaderboard across weeks. The pair table is grid-bounded (≤64
-    cells ⇒ ≤2016 pairs at ANY scale); C/D/ties exact BIGINTs; one
-    float tail.
-
-    Scale shape: one (cell, week) agg over points + a constant-size
-    pair join."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    mind = ev.agg(F.min(F.date_trunc("day", "ts")).alias("mind"))
-    wk = (
-        ev.crossJoin(mind)
-        .select(
-            cell_encode_col(lat, lng, 3).alias("cell"),
-            (F.datediff(F.date_trunc("day", "ts"), "mind") < 7).cast("long").alias(
-                "w1"
-            ),
-            (
-                (F.datediff(F.date_trunc("day", "ts"), "mind") >= 7)
-                & (F.datediff(F.date_trunc("day", "ts"), "mind") < 14)
-            ).cast("long").alias("w2"),
-        )
-        .groupBy("cell")
-        .agg(F.sum("w1").alias("x"), F.sum("w2").alias("y"))
-        .localCheckpoint(eager=True)
-    )
-    a, b = wk.alias("a"), wk.alias("b")
-    pairs = a.join(b, F.col("a.cell") < F.col("b.cell")).select(
-        (F.col("a.x") - F.col("b.x")).alias("dx"),
-        (F.col("a.y") - F.col("b.y")).alias("dy"),
-    )
-    agg = pairs.agg(
-        F.sum(((F.col("dx") * F.col("dy")) > 0).cast("long")).alias("c"),
-        F.sum(((F.col("dx") * F.col("dy")) < 0).cast("long")).alias("d"),
-        F.sum(((F.col("dx") == 0) & (F.col("dy") != 0)).cast("long")).alias("tx"),
-        F.sum(((F.col("dy") == 0) & (F.col("dx") != 0)).cast("long")).alias("ty"),
-    )
-    return agg.select(
-        "c",
-        "d",
-        "tx",
-        "ty",
-        F.round(
-            (F.col("c") - F.col("d"))
-            / F.sqrt(
-                (F.col("c") + F.col("d") + F.col("tx")).cast("double")
-                * (F.col("c") + F.col("d") + F.col("ty"))
-            ),
-            6,
-        ).alias("tau_b"),
-    )
-
-
-def _kendall_tau_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH wk AS MATERIALIZED (
-            SELECT {cell} AS cell,
-                   CAST(SUM(CASE WHEN d < 7 THEN 1 ELSE 0 END) AS BIGINT) AS x,
-                   CAST(SUM(CASE WHEN d >= 7 AND d < 14 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS y
-            FROM (SELECT event_id,
-                         date_diff('day',
-                             (SELECT MIN(date_trunc('day', ts)) FROM events),
-                             date_trunc('day', ts)) AS d
-                  FROM events)
-            GROUP BY 1),
-        pr AS (
-            SELECT a.x - b.x AS dx, a.y - b.y AS dy
-            FROM wk a JOIN wk b ON a.cell < b.cell),
-        agg AS (
-            SELECT CAST(SUM(CASE WHEN dx * dy > 0 THEN 1 ELSE 0 END) AS BIGINT) AS c,
-                   CAST(SUM(CASE WHEN dx * dy < 0 THEN 1 ELSE 0 END) AS BIGINT) AS d,
-                   CAST(SUM(CASE WHEN dx = 0 AND dy != 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS tx,
-                   CAST(SUM(CASE WHEN dy = 0 AND dx != 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS ty
-            FROM pr)
-        SELECT c, d, tx, ty,
-               ROUND((c - d) / SQRT(CAST(c + d + tx AS DOUBLE) * (c + d + ty)), 6)
-                   AS tau_b
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# competing risks / cumulative incidence (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_competing_risks(spark, sf_dir):
-    """Aalen-Johansen cumulative incidence under competing risks: per
-    user, the FIRST of (purchase, error) is the event (its cause), users
-    with neither are censored at their last day — CIF_k(t) =
-    Σ_{s≤t} S(s⁻)·d_ks/n_s with S the all-cause Kaplan-Meier — the
-    correct replacement for '1 − KM per cause' (which overestimates when
-    causes compete). Risk sets exact integers; S via the KM
-    exp∘cumsum∘ln 9-dp protocol. Output: the (t, CIF_purchase,
-    CIF_error) curve.
-
-    Scale shape: one user agg + one suffix window + two ordered
-    cumulations over O(distinct times)."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    per = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", "ts")).alias("first_d"),
-        F.max(F.date_trunc("day", "ts")).alias("last_d"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.date_trunc("day", "ts"))
-        ).alias("pd"),
-        F.min(
-            F.when(F.col("event_type") == "error", F.date_trunc("day", "ts"))
-        ).alias("ed"),
-    )
-    cause = (
-        F.when(F.col("pd").isNotNull() & (F.col("ed").isNull() | (F.col("pd") <= F.col("ed"))), 1)
-        .when(F.col("ed").isNotNull(), 2)
-        .otherwise(0)
-    )
-    evt_d = F.when(cause == 1, F.col("pd")).when(cause == 2, F.col("ed")).otherwise(
-        F.col("last_d")
-    )
-    subj = per.select(
-        cause.alias("k"),
-        (F.datediff(evt_d, "first_d") + 1).cast("long").alias("t"),
-    )
-    grp = subj.groupBy("t").agg(
-        F.sum((F.col("k") == 1).cast("long")).alias("d1"),
-        F.sum((F.col("k") == 2).cast("long")).alias("d2"),
-        F.count(F.lit(1)).alias("c"),
-    )
-    w = Window.orderBy(F.desc("t")).rowsBetween(Window.unboundedPreceding, 0)
-    risk = (
-        grp.select("t", "d1", "d2", F.sum("c").over(w).alias("n"))
-        .filter((F.col("d1") + F.col("d2")) > 0)
-        .localCheckpoint(eager=True)
-    )
-    wo = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
-    wp = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    d = F.col("d1") + F.col("d2")
-    # d == n exhausts the risk set: survival past t is exactly 0 — encode as
-    # a -1e9 ln-term (exp underflows to 0.0 identically in both engines)
-    lnterm = F.when(
-        d < F.col("n"),
-        F.round(F.log(F.lit(1.0) - d / F.col("n").cast("double")), 9),
-    ).otherwise(F.lit(-1e9))
-    curve = risk.select("t", "d1", "d2", "n", lnterm.alias("lnq")).select(
-        "t",
-        "d1",
-        "d2",
-        "n",
-        F.round(
-            F.exp(F.coalesce(F.sum("lnq").over(wp), F.lit(0.0))), 9
-        ).alias("s_prev"),
-    )
-    return curve.select(
-        "t",
-        F.round(
-            F.sum(
-                F.round(F.col("s_prev") * F.col("d1") / F.col("n").cast("double"), 9)
-            ).over(wo),
-            6,
-        ).alias("cif_purchase"),
-        F.round(
-            F.sum(
-                F.round(F.col("s_prev") * F.col("d2") / F.col("n").cast("double"), 9)
-            ).over(wo),
-            6,
-        ).alias("cif_error"),
-    ).orderBy("t")
-
-
-def _competing_risks_sql() -> str:
-    return """
-        WITH per AS (
-            SELECT user_id,
-                   MIN(date_trunc('day', ts)) AS first_d,
-                   MAX(date_trunc('day', ts)) AS last_d,
-                   MIN(CASE WHEN event_type = 'purchase'
-                            THEN date_trunc('day', ts) END) AS pd,
-                   MIN(CASE WHEN event_type = 'error'
-                            THEN date_trunc('day', ts) END) AS ed
-            FROM events GROUP BY 1),
-        subj AS (
-            SELECT CASE WHEN pd IS NOT NULL AND (ed IS NULL OR pd <= ed) THEN 1
-                        WHEN ed IS NOT NULL THEN 2
-                        ELSE 0 END AS k,
-                   CAST(date_diff('day', first_d,
-                       CASE WHEN pd IS NOT NULL AND (ed IS NULL OR pd <= ed)
-                            THEN pd
-                            WHEN ed IS NOT NULL THEN ed
-                            ELSE last_d END) + 1 AS BIGINT) AS t
-            FROM per),
-        grp AS (
-            SELECT t,
-                   CAST(SUM(CASE WHEN k = 1 THEN 1 ELSE 0 END) AS BIGINT) AS d1,
-                   CAST(SUM(CASE WHEN k = 2 THEN 1 ELSE 0 END) AS BIGINT) AS d2,
-                   CAST(COUNT(*) AS BIGINT) AS c
-            FROM subj GROUP BY 1),
-        risk AS MATERIALIZED (
-            SELECT t, d1, d2,
-                   SUM(c) OVER (ORDER BY t DESC ROWS UNBOUNDED PRECEDING) AS n
-            FROM grp
-            QUALIFY d1 + d2 > 0),
-        curve AS (
-            SELECT t, d1, d2, n,
-                   ROUND(EXP(COALESCE(SUM(
-                       CASE WHEN d1 + d2 < n THEN
-                           ROUND(LN(1.0 - (d1 + d2) / CAST(n AS DOUBLE)), 9)
-                       ELSE -1e9 END)
-                       OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING), 0.0)), 9) AS s_prev
-            FROM risk)
-        SELECT t,
-               ROUND(SUM(ROUND(s_prev * d1 / CAST(n AS DOUBLE), 9))
-                     OVER (ORDER BY t ROWS UNBOUNDED PRECEDING), 6)
-                   AS cif_purchase,
-               ROUND(SUM(ROUND(s_prev * d2 / CAST(n AS DOUBLE), 9))
-                     OVER (ORDER BY t ROWS UNBOUNDED PRECEDING), 6)
-                   AS cif_error
-        FROM curve
-        ORDER BY t
-    """
-
-
-# ---------------------------------------------------------------------------
-# RFM segmentation (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_rfm_segments(spark, sf_dir):
-    """RFM (recency / frequency / monetary) quintile segmentation of the
-    user base — the marketing-analytics workhorse: R = days since last
-    event (lower = better, scored descending), F = event count, M =
-    total value in exact integer cents; each scored 1-5 by NTILE over a
-    deterministic (metric, user_id) total order (both engines cut
-    identically); segment code = 100R+10F+M. Top-15 segments by
-    population.
-
-    Scale shape: one user agg, then each NTILE is a TWO-PHASE global rank
-    (bounded metric-value buckets + broadcast offsets — no O(users)
-    single-partition window) fed through the closed-form NTILE formula
-    (first n%5 buckets get ⌈n/5⌉ rows), which reproduces the engines'
-    NTILE bit-for-bit; one segment rollup."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts", "value")
-    endt = ev.agg(F.max(F.date_trunc("day", "ts")).alias("endd"))
-    per = (
-        ev.crossJoin(endt)
-        .groupBy("user_id")
-        .agg(
-            F.datediff(
-                F.max("endd"), F.max(F.date_trunc("day", "ts"))
-            ).alias("recency"),
-            F.count(F.lit(1)).alias("freq"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    tot = per.agg(F.count(F.lit(1)).alias("n_tot"))
-
-    def ntile5(r):
-        # SQL NTILE(5) closed form over the global rank r: the first
-        # n % 5 tiles hold ceil(n/5) rows, the rest floor(n/5).
-        n = F.col("n_tot")
-        small, rem = F.floor(n / 5), n % 5
-        big = small + 1
-        return (
-            F.when(r <= rem * big, F.lit(1) + F.floor((r - 1) / big))
-            .otherwise(rem + 1 + F.floor((r - rem * big - 1) / small))
-            .cast("int")
-        )
-
-    # bucket keys: recency is O(calendar days), freq is O(max events/user),
-    # cents bucketed per 1000 currency units — all bounded aggregates
-    ranked = _two_phase_row_number(
-        per, (-F.col("recency")).cast("long"), [F.col("user_id")], out="rank_r"
-    )
-    ranked = _two_phase_row_number(
-        ranked, F.col("freq"), [F.col("user_id")], out="rank_f"
-    )
-    ranked = _two_phase_row_number(
-        ranked, F.floor(F.col("cents") / 100000),
-        [F.col("cents"), F.col("user_id")], out="rank_m",
-    )
-    scored = ranked.crossJoin(F.broadcast(tot)).select(
-        "user_id",
-        ntile5(F.col("rank_r")).alias("r"),
-        ntile5(F.col("rank_f")).alias("f"),
-        ntile5(F.col("rank_m")).alias("m"),
-    )
-    return (
-        scored.select(
-            (F.col("r") * 100 + F.col("f") * 10 + F.col("m")).alias("segment")
-        )
-        .groupBy("segment")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-        .orderBy(F.desc("n_users"), "segment")
-        .limit(15)
-    )
-
-
-def _rfm_segments_sql() -> str:
-    return """
-        WITH per AS MATERIALIZED (
-            SELECT user_id,
-                   date_diff('day', MAX(date_trunc('day', ts)),
-                       (SELECT MAX(date_trunc('day', ts)) FROM events))
-                       AS recency,
-                   CAST(COUNT(*) AS BIGINT) AS freq,
-                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-                       AS cents
-            FROM events GROUP BY 1),
-        scored AS (
-            SELECT user_id,
-                   NTILE(5) OVER (ORDER BY recency DESC, user_id) AS r,
-                   NTILE(5) OVER (ORDER BY freq, user_id) AS f,
-                   NTILE(5) OVER (ORDER BY cents, user_id) AS m
-            FROM per)
-        SELECT r * 100 + f * 10 + m AS segment,
-               CAST(COUNT(*) AS BIGINT) AS n_users
-        FROM scored
-        GROUP BY 1
-        ORDER BY n_users DESC, segment LIMIT 15
-    """
-
-
-# ---------------------------------------------------------------------------
-# cross-variogram (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_cross_variogram(spark, sf_dir):
-    """Cross-variogram between the document and event density surfaces:
-    γ_xy(h) = Σ(x_i−x_j)(y_i−y_j)/(2N_h) over cell pairs at exact
-    Chebyshev ring distance h ∈ {1,2,3} at res 5 — the MULTIVARIATE
-    member that completes the variogram family (semivariogram,
-    directional, fit, kriging): does co-variation persist with
-    distance, the precondition for co-kriging. Values on the full-outer
-    cell grid (missing side 0) so products are exact BIGINTs; one float
-    ratio per lag.
-
-    Scale shape: two point aggs + full-outer join + the
-    distance-carrying ring join on O(occupied)."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    dlat, dlng = _latlng_cols(F.col("doc_id"))
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    elat, elng = _latlng_cols(F.col("event_id"))
-    dc = d.groupBy(cell_encode_col(dlat, dlng, 5).alias("cell")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    ec = ev.groupBy(cell_encode_col(elat, elng, 5).alias("cell")).agg(
-        F.count(F.lit(1)).alias("y")
-    )
-    g = (
-        dc.join(ec, "cell", "full_outer")
-        .select(
-            "cell",
-            F.coalesce("x", F.lit(0)).alias("x"),
-            F.coalesce("y", F.lit(0)).alias("y"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # constants-only offsets explode + ONE post-explode neighbor expression
-    # (the per-element array form blew the 64 KB codegen method limit at
-    # k=3 — see neighborhood.ring_offsets_explode / BENCH_r03 Janino tail)
-    offs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(max(abs(dx), abs(dy))).alias("h"),
-                    F.lit(dx).alias("dx"),
-                    F.lit(dy).alias("dy"),
-                )
-                for dx, dy in _offsets(3)
-                if (dx, dy) != (0, 0)
-            ]
-        )
-    )
-    pairs = (
-        g.select("cell", "x", "y", offs.alias("o"))
-        .select(
-            "x",
-            "y",
-            F.col("o.h").alias("h"),
-            kring_neighbor_col("cell", 5, F.col("o.dx"), F.col("o.dy")).alias(
-                "nbr"
-            ),
-        )
-        .filter(F.col("nbr").isNotNull())
-        .join(
-            g.select(
-                F.col("cell").alias("nbr"),
-                F.col("x").alias("xn"),
-                F.col("y").alias("yn"),
-            ),
-            "nbr",
-        )
-    )
-    return (
-        pairs.groupBy("h")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(
-                (F.col("x") - F.col("xn")) * (F.col("y") - F.col("yn"))
-            ).alias("s"),
-        )
-        .select(
-            "h",
-            "n_pairs",
-            F.round(F.col("s") / (2 * F.col("n_pairs")).cast("double"), 6).alias(
-                "gamma_xy"
-            ),
-        )
-        .orderBy("h")
-    )
-
-
-def _cross_variogram_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    dlat, dlng = _latlng_sql("doc_id")
-    elat, elng = _latlng_sql("event_id")
-    dcell = cell_encode_sql(dlat, dlng, 5)
-    ecell = cell_encode_sql(elat, elng, 5)
-    offs = ", ".join(
-        f"({max(abs(dx), abs(dy))}, {dx}, {dy})"
-        for dx, dy in _offsets(3)
-        if (dx, dy) != (0, 0)
-    )
-    nbr = kring_neighbor_sql("g.cell", 5, "v.dx", "v.dy")
-    return f"""
-        WITH dc AS (SELECT {dcell} AS cell, CAST(COUNT(*) AS BIGINT) AS x
-                    FROM documents GROUP BY 1),
-        ec AS (SELECT {ecell} AS cell, CAST(COUNT(*) AS BIGINT) AS y
-               FROM events GROUP BY 1),
-        g AS MATERIALIZED (
-            SELECT COALESCE(dc.cell, ec.cell) AS cell,
-                   COALESCE(x, 0) AS x, COALESCE(y, 0) AS y
-            FROM dc FULL OUTER JOIN ec ON dc.cell = ec.cell),
-        pr AS (
-            SELECT v.h, g.x, g.y, q.x AS xn, q.y AS yn
-            FROM g CROSS JOIN (VALUES {offs}) v(h, dx, dy)
-            JOIN g q ON q.cell = {nbr})
-        SELECT h, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-               ROUND(SUM((x - xn) * (y - yn))
-                     / CAST(2 * COUNT(*) AS DOUBLE), 6) AS gamma_xy
-        FROM pr GROUP BY 1 ORDER BY 1
-    """
-
-
-# ---------------------------------------------------------------------------
-# join-key skew report (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_skew_report(spark, sf_dir):
-    """Join-key skew diagnostic for the res-4 cell key (the key every
-    tile join shuffles on): per-key share of the heaviest key, p99/p50
-    key-size ratio (exact order statistics), key-count Gini, and the
-    share of rows in the top-1% of keys — the numbers that decide
-    whether a shuffle needs salting/AQE-skew handling BEFORE you run it
-    at 100 TB (the engineering meta-operator behind `hot_cells`).
-    All-integer order statistics; exact ratios.
-
-    Scale shape: one key-count agg + one rank window over O(keys)."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    keys = (
-        ev.groupBy(cell_encode_col(lat, lng, 4).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    w = Window.orderBy("c")
-    ranked = keys.withColumn("rn", F.row_number().over(w))
-    tot = keys.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("c").alias("n"),
-        F.max("c").alias("cmax"),
-    )
-    # Gini over key sizes via the rank formula: G = (2·Σ rn·c)/(k·Σc) − (k+1)/k
-    g = ranked.agg(F.sum(F.col("rn") * F.col("c")).alias("src"))
-    q = ranked.crossJoin(tot).select(
-        "c",
-        "rn",
-        "k",
-        "n",
-        "cmax",
-        F.when(F.col("rn") == -(-50 * F.col("k") / 100).cast("long"), F.col("c")).alias(
-            "p50v"
-        ),
-        F.when(F.col("rn") == -(-99 * F.col("k") / 100).cast("long"), F.col("c")).alias(
-            "p99v"
-        ),
-        F.when(F.col("rn") > F.col("k") - F.greatest(F.lit(1), (F.col("k") / 100).cast("long")), F.col("c")).alias(
-            "topc"
-        ),
-    )
-    agg = q.agg(
-        F.max("k").alias("k"),
-        F.max("n").alias("n"),
-        F.max("cmax").alias("cmax"),
-        F.max("p50v").alias("p50"),
-        F.max("p99v").alias("p99"),
-        F.sum("topc").alias("top1pct_rows"),
-    ).crossJoin(g)
-    return agg.select(
-        "k",
-        "n",
-        F.round(F.col("cmax") / F.col("n").cast("double"), 6).alias("max_key_share"),
-        F.round(F.col("p99") / F.col("p50").cast("double"), 6).alias("p99_over_p50"),
-        F.round(
-            2 * F.col("src") / (F.col("k") * F.col("n")).cast("double")
-            - (F.col("k") + 1) / F.col("k").cast("double"),
-            6,
-        ).alias("gini"),
-        F.round(F.col("top1pct_rows") / F.col("n").cast("double"), 6).alias(
-            "top1pct_share"
-        ),
-    )
-
-
-def _skew_report_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH keys AS MATERIALIZED (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS c
-            FROM events GROUP BY 1),
-        ranked AS (
-            SELECT c, ROW_NUMBER() OVER (ORDER BY c) AS rn FROM keys),
-        tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                       CAST(SUM(c) AS BIGINT) AS n,
-                       CAST(MAX(c) AS BIGINT) AS cmax
-                FROM keys),
-        g AS (SELECT CAST(SUM(rn * c) AS BIGINT) AS src FROM ranked),
-        q AS (
-            SELECT MAX(t.k) AS k, MAX(t.n) AS n, MAX(t.cmax) AS cmax,
-                   MAX(CASE WHEN rn = CAST(CEIL(50 * t.k / 100.0) AS BIGINT)
-                       THEN c END) AS p50,
-                   MAX(CASE WHEN rn = CAST(CEIL(99 * t.k / 100.0) AS BIGINT)
-                       THEN c END) AS p99,
-                   CAST(SUM(CASE WHEN rn > t.k - GREATEST(1, t.k // 100)
-                            THEN c ELSE 0 END) AS BIGINT) AS top1pct_rows
-            FROM ranked CROSS JOIN tot t)
-        SELECT k, n,
-               ROUND(cmax / CAST(n AS DOUBLE), 6) AS max_key_share,
-               ROUND(p99 / CAST(p50 AS DOUBLE), 6) AS p99_over_p50,
-               ROUND(2 * g.src / CAST(k * n AS DOUBLE)
-                     - (k + 1) / CAST(k AS DOUBLE), 6) AS gini,
-               ROUND(top1pct_rows / CAST(n AS DOUBLE), 6) AS top1pct_share
-        FROM q CROSS JOIN g
-    """
-
-
-# ---------------------------------------------------------------------------
-# leaderboard churn (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_leaderboard_churn(spark, sf_dir):
-    """Daily top-10 tile leaderboard churn: per day the 10 busiest res-4
-    cells (tie → cell asc), then (a) day-over-day turnover = |top10_d ∖
-    top10_{d−1}| and (b) per-cell persistence = total days spent in the
-    top 10 — the 'how volatile is the hot set' diagnostic that decides
-    whether a cache of hot tiles is worth anything (`trending_cells`
-    detects risers; THIS measures set stability). All-integer.
-
-    Scale shape: one (day, cell) agg + per-day rank window + one lagged
-    day self-join on the O(days×10) leaderboard."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    dc = ev.groupBy(
-        F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-        cell_encode_col(lat, lng, 4).alias("cell"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    w = Window.partitionBy("day").orderBy(F.desc("c"), "cell")
-    top = (
-        dc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("day", "cell")
-        .localCheckpoint(eager=True)
-    )
-    days = top.select("day").distinct()
-    wd = Window.orderBy("day")
-    dpairs = days.select(
-        "day", F.lag("day").over(wd).alias("prev")
-    ).filter(F.col("prev").isNotNull())
-    stay = (
-        dpairs.join(top, "day")
-        .join(
-            top.select(F.col("day").alias("prev"), F.col("cell").alias("pcell")),
-            ["prev"],
-        )
-        .filter(F.col("cell") == F.col("pcell"))
-        .groupBy("day")
-        .agg(F.count(F.lit(1)).alias("kept"))
-    )
-    churn = dpairs.join(stay, "day", "left").select(
-        "day", (F.lit(10) - F.coalesce("kept", F.lit(0))).alias("turnover")
-    )
-    pers = top.groupBy("cell").agg(F.count(F.lit(1)).alias("days_in_top"))
-    tstats = churn.agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum("turnover").alias("total_turnover"),
-    )
-    pstats = pers.agg(
-        F.count(F.lit(1)).alias("distinct_cells"),
-        F.max("days_in_top").alias("max_persistence"),
-    )
-    return tstats.crossJoin(pstats).select(
-        "n_days",
-        "total_turnover",
-        F.round(F.col("total_turnover") / (10.0 * F.col("n_days")), 6).alias(
-            "turnover_rate"
-        ),
-        "distinct_cells",
-        "max_persistence",
-    )
-
-
-def _leaderboard_churn_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH dc AS (
-            SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
-                   {cell} AS cell, COUNT(*) AS c
-            FROM events GROUP BY 1, 2),
-        top AS MATERIALIZED (
-            SELECT day, cell FROM (
-                SELECT day, cell,
-                       ROW_NUMBER() OVER (PARTITION BY day
-                                          ORDER BY c DESC, cell) AS rn
-                FROM dc) WHERE rn <= 10),
-        days AS (
-            SELECT day, LAG(day) OVER (ORDER BY day) AS prev
-            FROM (SELECT DISTINCT day FROM top)),
-        dp AS (SELECT day, prev FROM days WHERE prev IS NOT NULL),
-        stay AS (
-            SELECT dp.day, CAST(COUNT(*) AS BIGINT) AS kept
-            FROM dp JOIN top t ON t.day = dp.day
-            JOIN top p ON p.day = dp.prev AND p.cell = t.cell
-            GROUP BY 1),
-        churn AS (
-            SELECT dp.day, 10 - COALESCE(s.kept, 0) AS turnover
-            FROM dp LEFT JOIN stay s USING (day)),
-        pers AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS days_in_top
-                 FROM top GROUP BY 1),
-        ts AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-                      CAST(SUM(turnover) AS BIGINT) AS total_turnover
-               FROM churn),
-        ps AS (SELECT CAST(COUNT(*) AS BIGINT) AS distinct_cells,
-                      CAST(MAX(days_in_top) AS BIGINT) AS max_persistence
-               FROM pers)
-        SELECT n_days, total_turnover,
-               ROUND(total_turnover / (10.0 * n_days), 6) AS turnover_rate,
-               distinct_cells, max_persistence
-        FROM ts CROSS JOIN ps
-    """
-
-
-# ---------------------------------------------------------------------------
-# weekly cohort overlap (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_week_overlap(spark, sf_dir):
-    """Weekly active-user overlap matrix: exact Jaccard between every
-    pair of the first 4 weeks' active-user sets — the EXACT ground truth
-    the sketch family (`kmv_set_ops`, `hll_distinct`) approximates, and
-    the set-level view of `cohort_retention` (which tracks only the
-    first-week cohort forward). All-integer (distinct-pair agg + set
-    sizes); exact ratios.
-
-    Scale shape: one (user, week) distinct agg + a keyed self-join on
-    user bounded by 4 weeks/user."""
-    ev = _read(spark, sf_dir, "events").select("user_id", "ts")
-    mind = ev.agg(F.min(F.date_trunc("day", "ts")).alias("mind"))
-    uw = (
-        ev.crossJoin(mind)
-        .select(
-            "user_id",
-            F.floor(F.datediff(F.date_trunc("day", "ts"), "mind") / 7)
-            .cast("long")
-            .alias("wk"),
-        )
-        .filter(F.col("wk") < 4)
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sz = uw.groupBy("wk").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        uw.alias("a")
-        .join(uw.alias("b"), (F.col("a.user_id") == F.col("b.user_id")) & (F.col("a.wk") < F.col("b.wk")))
-        .groupBy(F.col("a.wk").alias("w1"), F.col("b.wk").alias("w2"))
-        .agg(F.count(F.lit(1)).alias("m"))
-    )
-    return (
-        inter.join(sz.select(F.col("wk").alias("w1"), F.col("n").alias("n1")), "w1")
-        .join(sz.select(F.col("wk").alias("w2"), F.col("n").alias("n2")), "w2")
-        .select(
-            "w1",
-            "w2",
-            "n1",
-            "n2",
-            "m",
-            F.round(
-                F.col("m") / (F.col("n1") + F.col("n2") - F.col("m")).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
-        .orderBy("w1", "w2")
-    )
-
-
-def _week_overlap_sql() -> str:
-    return """
-        WITH uw AS MATERIALIZED (
-            SELECT DISTINCT user_id, wk FROM (
-                SELECT user_id,
-                       CAST(FLOOR(date_diff('day',
-                           (SELECT MIN(date_trunc('day', ts)) FROM events),
-                           date_trunc('day', ts)) / 7) AS BIGINT) AS wk
-                FROM events)
-            WHERE wk < 4),
-        sz AS (SELECT wk, CAST(COUNT(*) AS BIGINT) AS n FROM uw GROUP BY 1),
-        inter AS (
-            SELECT a.wk AS w1, b.wk AS w2, CAST(COUNT(*) AS BIGINT) AS m
-            FROM uw a JOIN uw b
-              ON a.user_id = b.user_id AND a.wk < b.wk
-            GROUP BY 1, 2)
-        SELECT w1, w2, s1.n AS n1, s2.n AS n2, m,
-               ROUND(m / CAST(s1.n + s2.n - m AS DOUBLE), 6) AS jaccard
-        FROM inter
-        JOIN sz s1 ON s1.wk = w1
-        JOIN sz s2 ON s2.wk = w2
-        ORDER BY w1, w2
-    """
-
-
-# ---------------------------------------------------------------------------
-# friendship paradox audit (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_friendship_paradox(spark, sf_dir):
-    """The friendship paradox (Feld 1991) on the co-location graph: mean
-    degree of a NODE vs mean degree of a random EDGE ENDPOINT (the
-    size-biased sample every edge-based crawl actually draws) — the
-    sampling-bias audit that explains why neighbor-based estimators
-    overestimate activity: E[d_edge] = Σd²/Σd ≥ E[d_node] = Σd/n, with
-    equality iff degrees are constant. Graph = distinct user pairs
-    co-occurring in a res-4 cell within the same day (bounded by the
-    `user_colocation` machinery). ALL exact integers; two ratios + the
-    variance-over-mean identity gap.
-
-    Scale shape: one (cell, day, user) distinct agg, a keyed self-join
-    per (cell, day) bucket, one degree agg."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    occ = (
-        ev.select(
-            "user_id",
-            cell_encode_col(lat, lng, 4).alias("cell"),
-            F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        occ.alias("a")
-        .join(
-            occ.alias("b"),
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.day") == F.col("b.day"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
-        .select(F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v"))
-        .distinct()
-    )
-    deg = (
-        edges.select(F.col("u").alias("user"))
-        .unionByName(edges.select(F.col("v").alias("user")))
-        .groupBy("user")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    agg = deg.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("d").alias("sd"),
-        F.sum(F.col("d") * F.col("d")).alias("sd2"),
-    )
-    return agg.select(
-        "n",
-        F.round(F.col("sd") / F.col("n").cast("double"), 6).alias("mean_node_deg"),
-        F.round(F.col("sd2") / F.col("sd").cast("double"), 6).alias(
-            "mean_edge_deg"
-        ),
-        F.round(
-            F.col("sd2") / F.col("sd").cast("double")
-            - F.col("sd") / F.col("n").cast("double"),
-            6,
-        ).alias("paradox_gap"),
-    )
-
-
-def _friendship_paradox_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    return f"""
-        WITH occ AS MATERIALIZED (
-            SELECT DISTINCT user_id, {cell} AS cell,
-                   strftime(date_trunc('day', ts), '%Y-%m-%d') AS day
-            FROM events),
-        e AS (
-            SELECT DISTINCT a.user_id AS u, b.user_id AS v
-            FROM occ a JOIN occ b
-              ON a.cell = b.cell AND a.day = b.day
-             AND a.user_id < b.user_id),
-        deg AS (
-            SELECT usr, CAST(COUNT(*) AS BIGINT) AS d FROM (
-                SELECT u AS usr FROM e UNION ALL SELECT v FROM e)
-            GROUP BY 1),
-        agg AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                       CAST(SUM(d) AS BIGINT) AS sd,
-                       CAST(SUM(d * d) AS BIGINT) AS sd2
-                FROM deg)
-        SELECT n,
-               ROUND(sd / CAST(n AS DOUBLE), 6) AS mean_node_deg,
-               ROUND(sd2 / CAST(sd AS DOUBLE), 6) AS mean_edge_deg,
-               ROUND(sd2 / CAST(sd AS DOUBLE) - sd / CAST(n AS DOUBLE), 6)
-                   AS paradox_gap
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# exact 1-D earth mover's distance (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_emd_values(spark, sf_dir):
-    """Exact 1-D Wasserstein-1 (earth mover's) distance between event-value
-    distributions of pairs of event types: in one dimension
-    EMD = ∫|F₁ − F₂| — computed EXACTLY as the sum over the merged
-    integer-cent support of |ΔCDF|·gap_width — the transport metric the
-    binned `psi_drift`/`ks_two_sample` approximations sit above (KS is
-    the max of the same curve; EMD its integral). CDFs are exact integer
-    cross-multiplied fractions; the integral an exact integer sum of
-    products (scaled by n₁·n₂·100 at the end — one float division total).
-
-    Scale shape: one (type, cents) agg, per-type running-sum windows over
-    the O(distinct values) support, one lag window on the merged support."""
-    from pyspark.sql import Window
-
-    types = [("click", "purchase"), ("view", "error"), ("signup", "view")]
-    ev = _read(spark, sf_dir, "events").select(
-        "event_type", F.round(F.col("value") * 100).cast("long").alias("c")
-    )
-    out = None
-    for t1, t2 in types:
-        two = ev.filter(F.col("event_type").isin([t1, t2]))
-        n1 = two.filter(F.col("event_type") == t1).count()
-        n2 = two.filter(F.col("event_type") == t2).count()
-        sup = (
-            two.groupBy("c")
-            .agg(
-                F.sum((F.col("event_type") == t1).cast("long")).alias("a"),
-                F.sum((F.col("event_type") == t2).cast("long")).alias("b"),
-            )
-        )
-        w = Window.orderBy("c").rowsBetween(Window.unboundedPreceding, 0)
-        wl = Window.orderBy("c")
-        cum = sup.select(
-            "c",
-            F.sum("a").over(w).alias("ca"),
-            F.sum("b").over(w).alias("cb"),
-        ).withColumn("nxt", F.lead("c").over(wl))
-        # |F1 - F2| * gap, kept integer: |ca*n2 - cb*n1| * (nxt - c)
-        leg = (
-            cum.filter(F.col("nxt").isNotNull())
-            .agg(
-                F.sum(
-                    F.abs(F.col("ca") * n2 - F.col("cb") * n1)
-                    * (F.col("nxt") - F.col("c"))
-                ).alias("s")
-            )
-            .select(
-                F.lit(t1).alias("type_a"),
-                F.lit(t2).alias("type_b"),
-                F.round(
-                    F.col("s") / F.lit(float(n1) * float(n2) * 100.0), 6
-                ).alias("emd"),
-            )
-        )
-        out = leg if out is None else out.unionByName(leg)
-    return out.orderBy("type_a", "type_b")
-
-
-def _emd_values_sql() -> str:
-    types = [("click", "purchase"), ("view", "error"), ("signup", "view")]
-    legs = []
-    for t1, t2 in types:
-        legs.append(
-            f"""SELECT '{t1}' AS type_a, '{t2}' AS type_b,
-                   ROUND(s / (n1 * n2 * 100.0), 6) AS emd
-            FROM (
-                SELECT CAST(SUM(ABS(ca * n2 - cb * n1)
-                                * (nxt - c)) AS BIGINT) AS s,
-                       MAX(n1) AS n1, MAX(n2) AS n2
-                FROM (
-                    SELECT c,
-                           SUM(a) OVER (ORDER BY c ROWS UNBOUNDED PRECEDING) AS ca,
-                           SUM(b) OVER (ORDER BY c ROWS UNBOUNDED PRECEDING) AS cb,
-                           LEAD(c) OVER (ORDER BY c) AS nxt,
-                           (SELECT CAST(COUNT(*) AS BIGINT) FROM events
-                            WHERE event_type = '{t1}') AS n1,
-                           (SELECT CAST(COUNT(*) AS BIGINT) FROM events
-                            WHERE event_type = '{t2}') AS n2
-                    FROM (SELECT CAST(ROUND(value * 100) AS BIGINT) AS c,
-                                 CAST(SUM(CASE WHEN event_type = '{t1}'
-                                          THEN 1 ELSE 0 END) AS BIGINT) AS a,
-                                 CAST(SUM(CASE WHEN event_type = '{t2}'
-                                          THEN 1 ELSE 0 END) AS BIGINT) AS b
-                          FROM events
-                          WHERE event_type IN ('{t1}', '{t2}')
-                          GROUP BY 1))
-                WHERE nxt IS NOT NULL)"""
-        )
-    union = " UNION ALL ".join(legs)
-    return f"SELECT * FROM ({union}) ORDER BY type_a, type_b"
-
-
-# ---------------------------------------------------------------------------
-# peak detection with prominence (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_peak_prominence(spark, sf_dir):
-    """Topographic peak detection on the hourly event-count series: local
-    maxima (strictly above both neighbors; plateau ties resolved to the
-    earliest hour) with PROMINENCE = peak − max(highest valley floor on
-    either side before a higher bar) computed exactly via running maxima
-    — the signal-morphology primitive behind alert dedup ('one incident,
-    not five spikes'). All-integer; top-10 peaks by prominence.
-
-    Scale shape: the series is constant-size; three ordered windows."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hrs = (
-        ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    w = Window.orderBy("h")
-    lagd = hrs.select(
-        "h",
-        "x",
-        F.lag("x").over(w).alias("pv"),
-        F.lead("x").over(w).alias("nx"),
-    )
-    peaks = lagd.filter(
-        F.col("pv").isNotNull()
-        & F.col("nx").isNotNull()
-        & (F.col("x") > F.col("pv"))
-        & (F.col("x") >= F.col("nx"))
-    ).select("h", "x")
-    # prominence via min-between-this-and-next-higher on both sides:
-    # join peaks to the series, bounded by the CONSTANT series length
-    j = peaks.alias("p").join(hrs.alias("s"), F.lit(True))
-    left_block = (
-        j.filter(F.col("s.h") < F.col("p.h"))
-        .groupBy(F.col("p.h").alias("h"), F.col("p.x").alias("x"))
-        .agg(
-            F.max(
-                F.when(F.col("s.x") >= F.col("p.x"), F.col("s.h"))
-            ).alias("lb")
-        )
-    )
-    right_block = (
-        j.filter(F.col("s.h") > F.col("p.h"))
-        .groupBy(F.col("p.h").alias("h"))
-        .agg(
-            F.min(
-                F.when(F.col("s.x") >= F.col("p.x"), F.col("s.h"))
-            ).alias("rb")
-        )
-    )
-    pb = peaks.join(left_block.select("h", "lb"), "h", "left").join(
-        right_block, "h", "left"
-    )
-    # simpler exact definition: prominence = x - max(min_left_gap, min_right_gap)
-    lmin = (
-        pb.alias("p")
-        .join(hrs.alias("s"), F.lit(True))
-        .filter(
-            (F.col("s.h") < F.col("p.h"))
-            & (F.col("p.lb").isNull() | (F.col("s.h") > F.col("p.lb")))
-        )
-        .groupBy(F.col("p.h").alias("h"))
-        .agg(F.min(F.col("s.x")).alias("lmin"))
-    )
-    rmin = (
-        pb.alias("p")
-        .join(hrs.alias("s"), F.lit(True))
-        .filter(
-            (F.col("s.h") > F.col("p.h"))
-            & (F.col("p.rb").isNull() | (F.col("s.h") < F.col("p.rb")))
-        )
-        .groupBy(F.col("p.h").alias("h"))
-        .agg(F.min(F.col("s.x")).alias("rmin"))
-    )
-    res = (
-        pb.join(lmin, "h", "left")
-        .join(rmin, "h", "left")
-        .select(
-            F.date_format("h", "yyyy-MM-dd HH:00").alias("hour"),
-            "x",
-            (
-                F.col("x")
-                - F.greatest(
-                    F.coalesce("lmin", F.lit(0)), F.coalesce("rmin", F.lit(0))
-                )
-            ).alias("prominence"),
-        )
-    )
-    return res.orderBy(F.desc("prominence"), "hour").limit(10)
-
-
-def _peak_prominence_sql() -> str:
-    return """
-        WITH hrs AS MATERIALIZED (
-            SELECT date_trunc('hour', ts) AS h, CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        lagd AS (
-            SELECT h, x,
-                   LAG(x) OVER (ORDER BY h) AS pv,
-                   LEAD(x) OVER (ORDER BY h) AS nx
-            FROM hrs),
-        peaks AS MATERIALIZED (
-            SELECT h, x FROM lagd
-            WHERE pv IS NOT NULL AND nx IS NOT NULL AND x > pv AND x >= nx),
-        pb AS MATERIALIZED (
-            SELECT p.h, p.x,
-                   (SELECT MAX(s.h) FROM hrs s
-                    WHERE s.h < p.h AND s.x >= p.x) AS lb,
-                   (SELECT MIN(s.h) FROM hrs s
-                    WHERE s.h > p.h AND s.x >= p.x) AS rb
-            FROM peaks p),
-        lm AS (
-            SELECT p.h, MIN(s.x) AS lmin
-            FROM pb p JOIN hrs s
-              ON s.h < p.h AND (p.lb IS NULL OR s.h > p.lb)
-            GROUP BY 1),
-        rm AS (
-            SELECT p.h, MIN(s.x) AS rmin
-            FROM pb p JOIN hrs s
-              ON s.h > p.h AND (p.rb IS NULL OR s.h < p.rb)
-            GROUP BY 1)
-        SELECT strftime(p.h, '%Y-%m-%d %H:00') AS hour, p.x,
-               CAST(p.x - GREATEST(COALESCE(lm.lmin, 0),
-                                   COALESCE(rm.rmin, 0)) AS BIGINT)
-                   AS prominence
-        FROM pb p
-        LEFT JOIN lm ON lm.h = p.h
-        LEFT JOIN rm ON rm.h = p.h
-        ORDER BY prominence DESC, hour LIMIT 10
-    """
-
-
-# ---------------------------------------------------------------------------
-# conversion-lag quantiles (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_conversion_lag_quantiles(spark, sf_dir):
-    """Click→purchase conversion-lag quantiles: for every first-purchase-
-    after-click pair per user (the `asof` family's forward direction),
-    the exact p10/p25/p50/p75/p90 of the lag in seconds as integer order
-    statistics (ROW_NUMBER against ⌈q·n⌉ — the conformal/gpd exact-
-    quantile discipline, no interpolation ambiguity). The latency-SLO
-    view of the funnel.
-
-    Scale shape: ONE user window pairs each click with the next
-    purchase; the order statistics come from a CUMULATIVE HISTOGRAM —
-    per-lag-value counts (partial+final agg), one window over the
-    O(distinct integer seconds) aggregate (bounded by the observation
-    window), quantile = first lag with cum ≥ ⌈q·n⌉ — never a row_number
-    over the O(conversions) row set."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    nxt = ev.withColumn(
-        "next_p",
-        F.min(
-            F.when(
-                F.col("event_type") == "purchase",
-                F.struct(F.col("ts").alias("pts"), F.col("event_id").alias("pid")),
-            )
-        ).over(w),
-    )
-    lags = (
-        nxt.filter(
-            (F.col("event_type") == "click") & F.col("next_p").isNotNull()
-        )
-        .select(
-            F.floor(
-                (
-                    F.unix_micros(F.col("next_p.pts").cast("timestamp"))
-                    - F.unix_micros(F.col("ts").cast("timestamp"))
-                )
-                / 1_000_000
-            ).cast("long").alias("lag_s")
-        )
-        .localCheckpoint(eager=True)
-    )
-    n = lags.count()
-    freq = lags.groupBy("lag_s").agg(F.count(F.lit(1)).alias("c"))
-    wc = Window.orderBy("lag_s").rowsBetween(Window.unboundedPreceding, 0)
-    cum = freq.withColumn("cum", F.sum("c").over(wc))
-    qs = [10, 25, 50, 75, 90]
-    agg = cum.agg(
-        F.sum("c").alias("n"),
-        *[
-            F.min(
-                F.when(F.col("cum") >= -(-q * n // 100), F.col("lag_s"))
-            ).alias(f"p{q}")
-            for q in qs
-        ],
-    )
-    return agg.select("n", *[f"p{q}" for q in qs])
-
-
-def _conversion_lag_quantiles_sql() -> str:
-    qs = [10, 25, 50, 75, 90]
-    cols = ", ".join(
-        f"MAX(CASE WHEN rn = CAST(CEIL({q} * n / 100.0) AS BIGINT) "
-        f"THEN lag_s END) AS p{q}"
-        for q in qs
-    )
-    return f"""
-        WITH nxt AS (
-            SELECT event_type,
-                   epoch_us(CAST(ts AS TIMESTAMP)) AS t,
-                   (MIN(CASE WHEN event_type = 'purchase' THEN
-                        struct_pack(pts := epoch_us(CAST(ts AS TIMESTAMP)),
-                                    pid := event_id) END)
-                    OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
-                       AS next_p
-            FROM events),
-        lags AS MATERIALIZED (
-            SELECT CAST(FLOOR((next_p.pts - t) / 1000000.0) AS BIGINT) AS lag_s
-            FROM nxt
-            WHERE event_type = 'click' AND next_p IS NOT NULL),
-        ranked AS (
-            SELECT lag_s,
-                   ROW_NUMBER() OVER (ORDER BY lag_s) AS rn,
-                   COUNT(*) OVER () AS n
-            FROM lags)
-        SELECT CAST(MAX(n) AS BIGINT) AS n, {cols}
-        FROM ranked
-    """
-
-
-# ---------------------------------------------------------------------------
-# space-time kernel density (session 13)
-# ---------------------------------------------------------------------------
-
-# integer kernel weights (x4): spatial Chebyshev ring 0/1/2 -> 4/2/1,
-# temporal day lag 0/±1/±2 -> 4/2/1 — a separable triangular product
-# kernel with EXACT integer weights (the viewshed/od_raster no-float family)
-_STKDE_W = {0: 4, 1: 2, 2: 1}
-
-
-def q_stkde_hotspots(spark, sf_dir):
-    """Space-time kernel density (STKDE): each (res-5 cell, day) voxel's
-    density = Σ events·w_s(ring)·w_t(|Δday|) with separable integer
-    triangular kernels (ring ≤ 2, |Δday| ≤ 2) — the spatio-TEMPORAL
-    hotspot surface `kde_hotspots` (space only) and `emerging_hotspots`
-    (trend classes) sit beside; this is the density voxel cube itself.
-    ALL integer weights ⇒ exact parity. Top-15 voxels.
-
-    Scale shape: one (cell, day) agg over points, then a literal
-    (25 spatial offsets × 5 day lags) weighted expansion joined back on
-    the aggregated table — O(voxels·125), never points."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    vox = (
-        ev.groupBy(
-            cell_encode_col(lat, lng, 5).alias("cell"),
-            F.datediff(
-                F.date_trunc("day", "ts"), F.lit("2024-01-01").cast("date")
-            ).alias("d"),
-        )
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    # constants-only (dx, dy, dt, w) explode, neighbor id computed ONCE
-    # post-explode: 125 per-element neighbor expressions blew the 64 KB
-    # codegen method limit (Janino fallback — BENCH_r03 tail; see
-    # neighborhood.ring_offsets_explode)
-    arms = []
-    for dx, dy in _offsets(2):
-        ws = _STKDE_W[max(abs(dx), abs(dy))]
-        for dt in range(-2, 3):
-            arms.append(
-                F.struct(
-                    F.lit(dx).alias("dx"),
-                    F.lit(dy).alias("dy"),
-                    F.lit(dt).alias("dt"),
-                    F.lit(ws * _STKDE_W[abs(dt)]).alias("w"),
-                )
-            )
-    ex = (
-        vox.select("cell", "d", "x", F.explode(F.array(*arms)).alias("o"))
-        .select(
-            kring_neighbor_col("cell", 5, F.col("o.dx"), F.col("o.dy")).alias(
-                "tcell"
-            ),
-            (F.col("d") + F.col("o.dt")).alias("td"),
-            (F.col("x") * F.col("o.w")).alias("wx"),
-        )
-        .filter(F.col("tcell").isNotNull())
-    )
-    return (
-        ex.groupBy(F.col("tcell").alias("cell"), F.col("td").alias("d"))
-        .agg(F.sum("wx").alias("density"))
-        .orderBy(F.desc("density"), "cell", "d")
-        .limit(15)
-    )
-
-
-def _stkde_hotspots_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 5)
-    rows = []
-    for dx, dy in _offsets(2):
-        ws = _STKDE_W[max(abs(dx), abs(dy))]
-        for dt in range(-2, 3):
-            rows.append(f"({dx}, {dy}, {dt}, {ws * _STKDE_W[abs(dt)]})")
-    nbr = kring_neighbor_sql("v.cell", 5, "o.dx", "o.dy")
-    return f"""
-        WITH vox AS MATERIALIZED (
-            SELECT {cell} AS cell,
-                   date_diff('day', DATE '2024-01-01',
-                             date_trunc('day', ts)) AS d,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-        ex AS (
-            SELECT {nbr} AS tcell, v.d + o.dt AS td, v.x * o.w AS wx
-            FROM vox v CROSS JOIN (VALUES {', '.join(rows)}) o(dx, dy, dt, w)
-            WHERE {nbr} IS NOT NULL)
-        SELECT tcell AS cell, td AS d, CAST(SUM(wx) AS BIGINT) AS density
-        FROM ex GROUP BY 1, 2
-        ORDER BY density DESC, cell, d LIMIT 15
-    """
-
-
-# ---------------------------------------------------------------------------
-# OD flow asymmetry (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_flow_asymmetry(spark, sf_dir):
-    """Directional asymmetry of the res-3 OD flows: per unordered tile
-    pair, |f_ab − f_ba|/(f_ab + f_ba) — the net-commute index (0 =
-    balanced exchange, 1 = one-way corridor) that `user_od_flows`
-    (volumes) and `dyad_census` (binary reciprocity) bracket but don't
-    quantify. Exact integer flows; one ratio. Top-15 most asymmetric
-    pairs with ≥ 5 total crossings.
-
-    Scale shape: one OD window + count agg, one self-join keyed on the
-    canonical (min, max) pair."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    pts = ev.withColumn("cell", cell_encode_col(lat, lng, 3))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flows = (
-        pts.withColumn("prev_cell", F.lag("cell").over(w))
-        .filter(F.col("prev_cell").isNotNull() & (F.col("prev_cell") != F.col("cell")))
-        .groupBy(F.col("prev_cell").alias("src"), F.col("cell").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("f"))
-    )
-    canon = flows.select(
-        F.least("src", "dst").alias("a"),
-        F.greatest("src", "dst").alias("b"),
-        F.when(F.col("src") < F.col("dst"), F.col("f")).otherwise(0).alias("fab"),
-        F.when(F.col("src") > F.col("dst"), F.col("f")).otherwise(0).alias("fba"),
-    )
-    agg = canon.groupBy("a", "b").agg(
-        F.sum("fab").alias("fab"), F.sum("fba").alias("fba")
-    )
-    return (
-        agg.filter((F.col("fab") + F.col("fba")) >= 5)
-        .select(
-            "a",
-            "b",
-            "fab",
-            "fba",
-            F.round(
-                F.abs(F.col("fab") - F.col("fba"))
-                / (F.col("fab") + F.col("fba")).cast("double"),
-                6,
-            ).alias("asymmetry"),
-        )
-        .orderBy(F.desc("asymmetry"), F.desc(F.col("fab") + F.col("fba")), "a", "b")
-        .limit(15)
-    )
-
-
-def _flow_asymmetry_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH flows AS (
-            SELECT prev_cell AS src, cell AS dst, CAST(COUNT(*) AS BIGINT) AS f
-            FROM (SELECT cell, LAG(cell) OVER (PARTITION BY user_id
-                                               ORDER BY ts, event_id) AS prev_cell
-                  FROM (SELECT user_id, ts, event_id, {cell} AS cell FROM events))
-            WHERE prev_cell IS NOT NULL AND prev_cell != cell
-            GROUP BY 1, 2),
-        agg AS (
-            SELECT LEAST(src, dst) AS a, GREATEST(src, dst) AS b,
-                   CAST(SUM(CASE WHEN src < dst THEN f ELSE 0 END) AS BIGINT)
-                       AS fab,
-                   CAST(SUM(CASE WHEN src > dst THEN f ELSE 0 END) AS BIGINT)
-                       AS fba
-            FROM flows GROUP BY 1, 2)
-        SELECT a, b, fab, fba,
-               ROUND(ABS(fab - fba) / CAST(fab + fba AS DOUBLE), 6)
-                   AS asymmetry
-        FROM agg
-        WHERE fab + fba >= 5
-        ORDER BY asymmetry DESC, fab + fba DESC, a, b LIMIT 15
-    """
-
-
-# ---------------------------------------------------------------------------
-# Wald-Wolfowitz runs test (session 13)
-# ---------------------------------------------------------------------------
-
-
-def q_runs_test(spark, sf_dir):
-    """Wald-Wolfowitz runs test on the daily event-count series: days
-    classified above/below the EXACT integer median-threshold (x·n vs
-    Σx cross-multiplication — ties to 'below'), runs counted via one lag
-    window, z = (R − E[R])/σ_R from the closed form — the nonparametric
-    randomness screen (too FEW runs = clustering/trend, too MANY =
-    oscillation) beside `hourly_acf` (linear) and `recurrence_quant`
-    (nonlinear). Integer counts end to end; one shared float tail."""
-    from pyspark.sql import Window
-
-    days = (
-        _read(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").alias("d"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    tot = days.agg(F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx"))
-    lab = days.crossJoin(tot).select(
-        "d", (F.col("x") * F.col("n") > F.col("sx")).cast("long").alias("s")
-    )
-    w = Window.orderBy("d")
-    runs = lab.withColumn("prev", F.lag("s").over(w)).select(
-        "s",
-        F.when(F.col("prev").isNull() | (F.col("s") != F.col("prev")), 1)
-        .otherwise(0)
-        .alias("new_run"),
-    )
-    agg = runs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("s").alias("n1"),
-        F.sum("new_run").alias("r"),
-    )
-    n1 = F.col("n1")
-    n0 = F.col("n") - F.col("n1")
-    er = F.lit(1.0) + 2.0 * n1 * n0 / F.col("n").cast("double")
-    vr = (
-        2.0
-        * n1
-        * n0
-        * (2.0 * n1 * n0 - F.col("n"))
-        / (
-            F.col("n").cast("double")
-            * F.col("n")
-            * (F.col("n") - 1)
-        )
-    )
-    return agg.select(
-        "n",
-        n1.alias("n_above"),
-        F.col("r").alias("runs"),
-        F.round(er, 6).alias("expected_runs"),
-        F.round((F.col("r") - er) / F.sqrt(vr), 6).alias("z"),
-    )
-
-
-def _runs_test_sql() -> str:
-    return """
-        WITH days AS (
-            SELECT date_trunc('day', ts) AS d, CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                       CAST(SUM(x) AS BIGINT) AS sx
-                FROM days),
-        lab AS (
-            SELECT d, CASE WHEN x * n > sx THEN 1 ELSE 0 END AS s
-            FROM days CROSS JOIN tot),
-        runs AS (
-            SELECT s,
-                   CASE WHEN LAG(s) OVER (ORDER BY d) IS NULL
-                             OR s != LAG(s) OVER (ORDER BY d)
-                        THEN 1 ELSE 0 END AS new_run
-            FROM lab),
-        agg AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(s) AS BIGINT) AS n1,
-                   CAST(SUM(new_run) AS BIGINT) AS r
-            FROM runs)
-        SELECT n, n1 AS n_above, r AS runs,
-               ROUND(1.0 + 2.0 * n1 * (n - n1) / CAST(n AS DOUBLE), 6)
-                   AS expected_runs,
-               ROUND((r - (1.0 + 2.0 * n1 * (n - n1) / CAST(n AS DOUBLE)))
-                     / SQRT(2.0 * n1 * (n - n1)
-                            * (2.0 * n1 * (n - n1) - n)
-                            / (CAST(n AS DOUBLE) * n * (n - 1))), 6) AS z
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# Goertzel spectral power at pinned periods (session 13)
-# ---------------------------------------------------------------------------
-
-_GOERTZEL_PERIODS = (24, 12, 168)
-
-
-def _goertzel_step(dialect: str, coeff: float) -> str:
-    """One Goertzel recurrence step s = x + c·s1 − s2 as a fold expression
-    (state [s1, s2], element [x]); per-step 6-dp rounding pins the long
-    recurrence cross-engine (the Croston/LRU fold discipline — coarser
-    than 9 dp because 720 multiply-accumulate steps amplify last-digit
-    drift)."""
-    if dialect == "spark":
-        x, s1, s2, arr = "element_at(el, 1)", "element_at(acc, 1)", "element_at(acc, 2)", "array"
-    else:
-        x, s1, s2, arr = "el[1]", "acc[1]", "acc[2]", "list_value"
-    return f"{arr}(round({x} + {coeff!r} * {s1} - {s2}, 6), {s1})"
-
-
-def q_goertzel_power(spark, sf_dir):
-    """Single-bin spectral power of the hourly event-count series at the
-    pinned periods 24 h / 12 h / 168 h via the Goertzel recurrence —
-    the frequency-domain rhythm detector (`hourly_acf` is its
-    time-domain dual; Goertzel gives the POWER at exactly the periods
-    that matter without an FFT). Each period is ONE ordered array fold
-    (s = x + 2cos(ω)s₁ − s₂, coefficient a pinned literal, per-step
-    6-dp rounding); power = s₁² + s₂² − c·s₁s₂ on the demeaned series
-    (integer mean cross-multiplied out as exact cents).
-
-    Scale shape: one hour agg (dense-filled, constant 720 rows) + three
-    folds."""
-    import math
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hrs0 = ev.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    minh = hrs0.select(F.min("h").alias("minh"))
-    hrs = hrs0.crossJoin(minh).select(
-        F.floor(
-            (
-                F.unix_micros(F.col("h").cast("timestamp"))
-                - F.unix_micros(F.col("minh").cast("timestamp"))
-            )
-            / F.lit(3_600_000_000)
-        ).cast("long").alias("i"),
-        "x",
-    )
-    span = hrs.agg(F.max("i").alias("mx")).collect()[0]["mx"]
-    n = int(span) + 1
-    tot = hrs.agg(F.sum("x")).collect()[0][0]
-    # demeaned exact values scaled by n: v = x*n - tot (integer!)
-    dense = (
-        spark.range(0, n)
-        .select(F.col("id").alias("i"))
-        .join(hrs, "i", "left")
-        .select(
-            "i",
-            (F.coalesce("x", F.lit(0)) * n - F.lit(int(tot))).cast("double").alias(
-                "v"
-            ),
-        )
-    )
-    series = dense.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "v"))), lambda s: s["v"]
-        ).alias("vs")
-    ).localCheckpoint(eager=True)
-    out = None
-    for p in _GOERTZEL_PERIODS:
-        c = _round_half_up(2.0 * math.cos(2.0 * math.pi / p), 9).item()
-        folded = series.withColumn(
-            "res",
-            F.expr(
-                "aggregate(transform(vs, v -> array(v)), array(0.0D, 0.0D), "
-                f"(acc, el) -> {_goertzel_step('spark', c)})"
-            ),
-        )
-        leg = folded.select(
-            F.lit(p).alias("period_h"),
-            F.round(
-                (
-                    F.element_at("res", 1) * F.element_at("res", 1)
-                    + F.element_at("res", 2) * F.element_at("res", 2)
-                    - F.lit(c)
-                    * F.element_at("res", 1)
-                    * F.element_at("res", 2)
-                )
-                / F.lit(float(n) ** 4),
-                6,
-            ).alias("power"),
-        )
-        out = leg if out is None else out.unionByName(leg)
-    return out.orderBy("period_h")
-
-
-def _goertzel_power_sql() -> str:
-    import math
-
-    legs = []
-    for p in _GOERTZEL_PERIODS:
-        c = float(_round_half_up(2.0 * math.cos(2.0 * math.pi / p), 9))
-        legs.append(
-            f"""SELECT {p} AS period_h,
-                   ROUND((res[1] * res[1] + res[2] * res[2]
-                          - {c!r} * res[1] * res[2])
-                         / POW(nn.n, 4), 6) AS power
-            FROM (SELECT list_reduce(list_prepend([0.0, 0.0],
-                             list_transform(vs, v -> [v])),
-                             (acc, el) -> {_goertzel_step('duckdb', c)}) AS res
-                  FROM series) CROSS JOIN nn"""
-        )
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH hrs AS (
-            SELECT CAST(date_diff('hour',
-                       (SELECT MIN(date_trunc('hour', ts)) FROM events),
-                       date_trunc('hour', ts)) AS BIGINT) AS i,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY date_trunc('hour', ts)),
-        nn AS (SELECT CAST(MAX(i) + 1 AS DOUBLE) AS n,
-                      (SELECT CAST(SUM(x) AS BIGINT) FROM hrs) AS tot
-               FROM hrs),
-        dense AS (
-            SELECT g.i,
-                   CAST(COALESCE(h.x, 0) * nn.n - nn.tot AS DOUBLE) AS v
-            FROM (SELECT UNNEST(range(0, (SELECT MAX(i) + 1 FROM hrs))) AS i) g
-            LEFT JOIN hrs h USING (i)
-            CROSS JOIN nn),
-        series AS MATERIALIZED (
-            SELECT list_transform(list_sort(list(struct_pack(i := i, v := v))),
-                                  s -> s.v) AS vs
-            FROM dense)
-        SELECT * FROM ({union}) ORDER BY period_h
-    """
-
-
-# ---------------------------------------------------------------------------
-# Mann-Kendall per-tile trend test (session 14)
-# ---------------------------------------------------------------------------
-
-
-def q_mann_kendall(spark, sf_dir):
-    """Mann-Kendall nonparametric trend test per res-2 tile on the daily
-    event-count series — the distribution-free sibling of
-    `theil_sen_cells` (that one estimates the slope, this one tests its
-    significance): S = Σ_{i<j} sign(x_j − x_i) with the tie-corrected
-    variance Var = [n(n−1)(2n+5) − Σ t(t−1)(2t+5)]/18 and the ±1
-    continuity-corrected z. S, n, and every tie term are exact BIGINTs;
-    one shared float tail. Tiles with ≥ 10 observed days and Var > 0,
-    ordered by z desc (strongest upward trend first).
-
-    Scale shape: the pair join is per-cell day×day — days are calendar-
-    bounded (~30), so pairs are O(cells · 435): grid-bounded, never
-    data-quadratic. One equi-join on cell + two aggs."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    days = (
-        ev.groupBy(
-            cell_encode_col(lat, lng, 2).alias("cell"),
-            F.date_trunc("day", "ts").alias("d"),
-        )
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    s = (
-        days.alias("a")
-        .join(
-            days.alias("b"),
-            (F.col("a.cell") == F.col("b.cell")) & (F.col("a.d") < F.col("b.d")),
-        )
-        .groupBy(F.col("a.cell").alias("cell"))
-        .agg(
-            F.sum(F.signum(F.col("b.x") - F.col("a.x")).cast("long")).alias("s")
-        )
-    )
-    nd = days.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-    ties = (
-        days.groupBy("cell", "x")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("cell")
-        .agg(
-            F.sum(
-                F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)
-            ).alias("tt")
-        )
-    )
-    n = F.col("n")
-    var = (n * (n - 1) * (2 * n + 5) - F.col("tt")) / F.lit(18.0)
-    z = (
-        F.when(F.col("s") > 0, (F.col("s") - 1) / F.sqrt(var))
-        .when(F.col("s") < 0, (F.col("s") + 1) / F.sqrt(var))
-        .otherwise(F.lit(0.0))
-    )
-    return (
-        nd.join(s, "cell")
-        .join(ties, "cell")
-        .filter((F.col("n") >= 10) & (var > 0))
-        .select(
-            "cell",
-            F.col("n").alias("n_days"),
-            "s",
-            F.round(var, 6).alias("var_s"),
-            F.round(z, 6).alias("z"),
-        )
-        .orderBy(F.desc("z"), "cell")
-    )
-
-
-def _mann_kendall_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    return f"""
-        WITH days AS MATERIALIZED (
-            SELECT {cell} AS cell, date_trunc('day', ts) AS d,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-        s AS (
-            SELECT a.cell, CAST(SUM(SIGN(b.x - a.x)) AS BIGINT) AS s
-            FROM days a JOIN days b ON a.cell = b.cell AND a.d < b.d
-            GROUP BY a.cell),
-        nd AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n
-               FROM days GROUP BY cell),
-        ties AS (
-            SELECT cell,
-                   CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tt
-            FROM (SELECT cell, x, CAST(COUNT(*) AS BIGINT) AS t
-                  FROM days GROUP BY cell, x)
-            GROUP BY cell)
-        SELECT nd.cell, nd.n AS n_days, s.s,
-               ROUND((nd.n * (nd.n - 1) * (2 * nd.n + 5) - ties.tt) / 18.0, 6)
-                   AS var_s,
-               ROUND(CASE
-                   WHEN s.s > 0 THEN (s.s - 1)
-                       / SQRT((nd.n * (nd.n - 1) * (2 * nd.n + 5) - ties.tt)
-                              / 18.0)
-                   WHEN s.s < 0 THEN (s.s + 1)
-                       / SQRT((nd.n * (nd.n - 1) * (2 * nd.n + 5) - ties.tt)
-                              / 18.0)
-                   ELSE 0.0 END, 6) AS z
-        FROM nd JOIN s USING (cell) JOIN ties USING (cell)
-        WHERE nd.n >= 10
-          AND (nd.n * (nd.n - 1) * (2 * nd.n + 5) - ties.tt) / 18.0 > 0
-        ORDER BY z DESC, cell
-    """
-
-
-# ---------------------------------------------------------------------------
-# exact ROC AUC via the Mann-Whitney rank-sum (session 14)
-# ---------------------------------------------------------------------------
-
-
-def q_roc_auc(spark, sf_dir):
-    """Exact ROC AUC of event value as a purchase classifier, via the
-    Mann-Whitney U identity AUC = P(score⁺ > score⁻) + ½P(tie) — the
-    threshold-free companion to `pr_curve_11pt`/`calibration_bins`.
-    Scores are integer cents; per DISTINCT score the positive count is
-    multiplied by (2·negatives-below + negatives-at) so the doubled U
-    stays an exact BIGINT (ties contribute exactly half); AUC and Gini
-    are one shared float tail.
-
-    Scale shape: one (score) agg + ONE ordered window over DISTINCT
-    scores (bounded by the value domain, not rows) + a scalar agg — no
-    global row sort, no pair join (the naive AUC is n⁺·n⁻ pairs)."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        (F.col("event_type") == "purchase").cast("long").alias("pos"),
-    )
-    per = ev.groupBy("cents").agg(
-        F.sum("pos").alias("n1v"),
-        F.sum(F.lit(1) - F.col("pos")).alias("n0v"),
-    )
-    w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
-    u2 = per.select(
-        (
-            F.col("n1v")
-            * (2 * F.coalesce(F.sum("n0v").over(w), F.lit(0)) + F.col("n0v"))
-        ).alias("c"),
-        "n1v",
-        "n0v",
-    ).agg(
-        F.sum("c").alias("u2"),
-        F.sum("n1v").alias("n_pos"),
-        F.sum("n0v").alias("n_neg"),
-    )
-    auc = F.col("u2") / (2.0 * F.col("n_pos") * F.col("n_neg"))
-    return u2.select(
-        "n_pos",
-        "n_neg",
-        F.col("u2").alias("u_stat_x2"),
-        F.round(auc, 6).alias("auc"),
-        F.round(2.0 * auc - 1.0, 6).alias("gini"),
-    )
-
-
-def _roc_auc_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT CAST(ROUND(value * 100) AS BIGINT) AS cents,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS pos
-            FROM events),
-        per AS (
-            SELECT cents, CAST(SUM(pos) AS BIGINT) AS n1v,
-                   CAST(SUM(1 - pos) AS BIGINT) AS n0v
-            FROM ev GROUP BY cents),
-        cum AS (
-            SELECT n1v, n0v,
-                   COALESCE(SUM(n0v) OVER (ORDER BY cents
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                       0) AS below
-            FROM per),
-        agg AS (
-            SELECT CAST(SUM(n1v * (2 * below + n0v)) AS BIGINT) AS u2,
-                   CAST(SUM(n1v) AS BIGINT) AS n_pos,
-                   CAST(SUM(n0v) AS BIGINT) AS n_neg
-            FROM cum)
-        SELECT n_pos, n_neg, u2 AS u_stat_x2,
-               ROUND(u2 / (2.0 * n_pos * n_neg), 6) AS auc,
-               ROUND(2.0 * (u2 / (2.0 * n_pos * n_neg)) - 1.0, 6) AS gini
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# Cohen's kappa + McNemar paired-classifier tests (session 14)
-# ---------------------------------------------------------------------------
-
-
-def _value_order_stat(df, frac_num: int, frac_den: int):
-    """Exact ⌈n·frac⌉-th order statistic of integer cents WITHOUT a global
-    row sort: aggregate to distinct values, ONE ordered window over the
-    bounded value domain, pick the first value whose cumulative count
-    reaches k = ⌈n·num/den⌉ (integer cross-multiplication: cum·den ≥
-    n·num). Returns a 1-row (k-free) DataFrame with column `t`."""
-    from pyspark.sql import Window
-
-    per = df.groupBy("cents").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
-    tot = per.agg(F.sum("c").alias("n"))
-    return (
-        per.withColumn("cum", F.sum("c").over(w))
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("cum") * frac_den >= F.col("n") * frac_num)
-        .agg(F.min("cents").alias("t"))
-    )
-
-
-def q_cohen_kappa(spark, sf_dir):
-    """Cohen's kappa between two deterministic binary raters on events —
-    rater A: value above the exact integer-cent median (order statistic
-    by cross-multiplication, no float quantile), rater B: the event is a
-    conversion (purchase/signup) — the chance-corrected agreement scalar
-    beside `adjusted_rand` (which compares partitions, not raters). The
-    2×2 contingency is exact BIGINTs; p_o, p_e, kappa are one float
-    tail.
-
-    Scale shape: one distinct-value window for the median + one
-    contingency agg; no sort of raw rows."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        F.col("event_type").isin("purchase", "signup").cast("long").alias("b"),
-    )
-    med = _value_order_stat(ev, 1, 2)
-    lab = ev.crossJoin(F.broadcast(med)).select(
-        (F.col("cents") > F.col("t")).cast("long").alias("a"), "b"
-    )
-    agg = lab.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("a") * F.col("b")).alias("n11"),
-        F.sum(F.col("a") * (1 - F.col("b"))).alias("n10"),
-        F.sum((1 - F.col("a")) * F.col("b")).alias("n01"),
-        F.sum((1 - F.col("a")) * (1 - F.col("b"))).alias("n00"),
-    )
-    n = F.col("n").cast("double")
-    po = (F.col("n11") + F.col("n00")) / n
-    pe = (
-        (F.col("n11") + F.col("n10")) * (F.col("n11") + F.col("n01"))
-        + (F.col("n01") + F.col("n00")) * (F.col("n10") + F.col("n00"))
-    ) / (n * n)
-    return agg.select(
-        "n",
-        "n11",
-        "n10",
-        "n01",
-        "n00",
-        F.round(po, 6).alias("p_o"),
-        F.round(pe, 6).alias("p_e"),
-        F.round((po - pe) / (1.0 - pe), 6).alias("kappa"),
-    )
-
-
-def _cohen_kappa_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT CAST(ROUND(value * 100) AS BIGINT) AS cents,
-                   CASE WHEN event_type IN ('purchase', 'signup')
-                        THEN 1 ELSE 0 END AS b
-            FROM events),
-        per AS (SELECT cents, CAST(COUNT(*) AS BIGINT) AS c
-                FROM ev GROUP BY cents),
-        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM per),
-        med AS (
-            SELECT MIN(cents) AS t
-            FROM (SELECT cents,
-                         SUM(c) OVER (ORDER BY cents
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS cum
-                  FROM per) CROSS JOIN tot
-            WHERE cum * 2 >= n * 1),
-        lab AS (
-            SELECT CASE WHEN cents > t THEN 1 ELSE 0 END AS a, b
-            FROM ev CROSS JOIN med),
-        agg AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(a * b) AS BIGINT) AS n11,
-                   CAST(SUM(a * (1 - b)) AS BIGINT) AS n10,
-                   CAST(SUM((1 - a) * b) AS BIGINT) AS n01,
-                   CAST(SUM((1 - a) * (1 - b)) AS BIGINT) AS n00
-            FROM lab)
-        SELECT n, n11, n10, n01, n00,
-               ROUND((n11 + n00) / CAST(n AS DOUBLE), 6) AS p_o,
-               ROUND(((n11 + n10) * (n11 + n01)
-                      + (n01 + n00) * (n10 + n00))
-                     / (CAST(n AS DOUBLE) * n), 6) AS p_e,
-               ROUND(((n11 + n00) / CAST(n AS DOUBLE)
-                      - ((n11 + n10) * (n11 + n01)
-                         + (n01 + n00) * (n10 + n00))
-                        / (CAST(n AS DOUBLE) * n))
-                     / (1.0 - ((n11 + n10) * (n11 + n01)
-                               + (n01 + n00) * (n10 + n00))
-                              / (CAST(n AS DOUBLE) * n)), 6) AS kappa
-        FROM agg
-    """
-
-
-def q_mcnemar(spark, sf_dir):
-    """McNemar's paired test comparing two threshold classifiers for
-    purchase on the SAME events — A: value > exact p50, B: value > exact
-    p75 (both integer-cent order statistics) — does the cheaper/stricter
-    threshold change accuracy, judged only on the b/c discordant pairs
-    (the paired design `ab_proportions` can't express). b, c, and both
-    accuracies are exact BIGINT counts; χ² with the −1 continuity
-    correction is the float tail.
-
-    Scale shape: the two thresholds come from ONE distinct-value window
-    (shared CTE); then a single agg over labeled rows."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        (F.col("event_type") == "purchase").cast("long").alias("y"),
-    )
-    t50 = _value_order_stat(ev, 1, 2).select(F.col("t").alias("t50"))
-    t75 = _value_order_stat(ev, 3, 4).select(F.col("t").alias("t75"))
-    lab = (
-        ev.crossJoin(F.broadcast(t50))
-        .crossJoin(F.broadcast(t75))
-        .select(
-            "y",
-            (F.col("cents") > F.col("t50")).cast("long").alias("a"),
-            (F.col("cents") > F.col("t75")).cast("long").alias("b"),
-        )
-    )
-    ra = (F.col("a") == F.col("y")).cast("long")
-    rb = (F.col("b") == F.col("y")).cast("long")
-    agg = lab.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(ra).alias("acc_a_n"),
-        F.sum(rb).alias("acc_b_n"),
-        F.sum(ra * (1 - rb)).alias("b_disc"),
-        F.sum((1 - ra) * rb).alias("c_disc"),
-    )
-    bc = F.col("b_disc") + F.col("c_disc")
-    d = F.abs(F.col("b_disc") - F.col("c_disc"))
-    chi2 = F.when(
-        bc > 0, (d - 1) * (d - 1) / bc.cast("double")
-    ).otherwise(F.lit(0.0))
-    return agg.select(
-        "n",
-        "acc_a_n",
-        "acc_b_n",
-        "b_disc",
-        "c_disc",
-        F.round(chi2, 6).alias("chi2"),
-    )
-
-
-def _mcnemar_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT CAST(ROUND(value * 100) AS BIGINT) AS cents,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-            FROM events),
-        per AS (SELECT cents, CAST(COUNT(*) AS BIGINT) AS c
-                FROM ev GROUP BY cents),
-        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM per),
-        cum AS (
-            SELECT cents,
-                   SUM(c) OVER (ORDER BY cents
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND CURRENT ROW) AS cum
-            FROM per),
-        t50 AS (SELECT MIN(cents) AS t50 FROM cum CROSS JOIN tot
-                WHERE cum * 2 >= n * 1),
-        t75 AS (SELECT MIN(cents) AS t75 FROM cum CROSS JOIN tot
-                WHERE cum * 4 >= n * 3),
-        lab AS (
-            SELECT y,
-                   CASE WHEN cents > t50 THEN 1 ELSE 0 END AS a,
-                   CASE WHEN cents > t75 THEN 1 ELSE 0 END AS b
-            FROM ev CROSS JOIN t50 CROSS JOIN t75),
-        agg AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN a = y THEN 1 ELSE 0 END) AS BIGINT)
-                       AS acc_a_n,
-                   CAST(SUM(CASE WHEN b = y THEN 1 ELSE 0 END) AS BIGINT)
-                       AS acc_b_n,
-                   CAST(SUM(CASE WHEN a = y AND b != y THEN 1 ELSE 0 END)
-                       AS BIGINT) AS b_disc,
-                   CAST(SUM(CASE WHEN a != y AND b = y THEN 1 ELSE 0 END)
-                       AS BIGINT) AS c_disc
-            FROM lab)
-        SELECT n, acc_a_n, acc_b_n, b_disc, c_disc,
-               ROUND(CASE WHEN b_disc + c_disc > 0
-                          THEN (ABS(b_disc - c_disc) - 1)
-                               * (ABS(b_disc - c_disc) - 1)
-                               / CAST(b_disc + c_disc AS DOUBLE)
-                          ELSE 0.0 END, 6) AS chi2
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# information flow between tiles + series complexity (session 14)
-# ---------------------------------------------------------------------------
-
-
-def _top2_cell_series(spark, sf_dir):
-    """Dense hourly count series of the two most active res-1 tiles as ONE
-    frame (h, xa, xb) — a = rank-1 cell, b = rank-2 (count desc, cell asc
-    tie-break). Shared by transfer_entropy / granger_causality. The hour
-    ladder is calendar-bounded (~720), cells ranked by one agg + window."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    ch = ev.select(
-        cell_encode_col(lat, lng, 1).alias("cell"), hour.alias("h")
-    ).groupBy("cell", "h").agg(F.count(F.lit(1)).alias("x"))
-    top2 = (
-        ch.groupBy("cell")
-        .agg(F.sum("x").alias("n"))
-        .withColumn(
-            "rk",
-            F.row_number().over(Window.orderBy(F.desc("n"), "cell")),
-        )
-        .filter(F.col("rk") <= 2)
-        .select("cell", "rk")
-    )
-    sel = ch.join(F.broadcast(top2), "cell")
-    span = sel.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = span.select(
-        F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("h")
-    )
-    a = sel.filter(F.col("rk") == 1).select("h", F.col("x").alias("xa"))
-    b = sel.filter(F.col("rk") == 2).select("h", F.col("x").alias("xb"))
-    return (
-        dense.join(a, "h", "left")
-        .join(b, "h", "left")
-        .select(
-            "h",
-            F.coalesce("xa", F.lit(0)).alias("xa"),
-            F.coalesce("xb", F.lit(0)).alias("xb"),
-        )
-    )
-
-
-def _top2_cell_series_sql() -> str:
-    """DuckDB CTE twin of _top2_cell_series, ending in `series(h, xa, xb)`."""
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 1)
-    return f"""
-        ch AS MATERIALIZED (
-            SELECT {cell} AS cell,
-                   CAST(FLOOR(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                       AS BIGINT) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-        top2 AS (
-            SELECT cell, rk FROM (
-                SELECT cell,
-                       ROW_NUMBER() OVER (ORDER BY SUM(x) DESC, cell) AS rk
-                FROM ch GROUP BY cell)
-            WHERE rk <= 2),
-        sel AS (SELECT ch.*, top2.rk FROM ch JOIN top2 USING (cell)),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM sel),
-        dense AS (
-            SELECT UNNEST(range(h0, h1 + 1)) AS h FROM span),
-        series AS MATERIALIZED (
-            SELECT d.h,
-                   COALESCE(a.x, 0) AS xa,
-                   COALESCE(b.x, 0) AS xb
-            FROM dense d
-            LEFT JOIN (SELECT h, x FROM sel WHERE rk = 1) a USING (h)
-            LEFT JOIN (SELECT h, x FROM sel WHERE rk = 2) b USING (h))"""
-
-
-def q_transfer_entropy(spark, sf_dir):
-    """Transfer entropy between the two most active res-1 tiles' hourly
-    ACTIVITY series (binarized presence) in BOTH directions — the
-    directed-coupling screen `cell_xcorr` (symmetric, linear) can't
-    express: TE(X→Y) = Σ p(y⁺,y,x)·ln[ p(y⁺|y,x) / p(y⁺|y) ], all
-    probabilities exact integer transition counts, ln on exact ratios.
-    Two rows (direction, n_transitions, te), te ≥ 0 up to rounding.
-
-    Scale shape: one (cell, hour) agg, a broadcast 2-row rank join, a
-    calendar-bounded ladder, ONE lead window + two grouped counts."""
-    from pyspark.sql import Window
-
-    s = _top2_cell_series(spark, sf_dir).select(
-        "h",
-        (F.col("xa") > 0).cast("long").alias("sa"),
-        (F.col("xb") > 0).cast("long").alias("sb"),
-    )
-    w = Window.orderBy("h")
-    legs = []
-    for direction, src, dst in (("b->a", "sb", "sa"), ("a->b", "sa", "sb")):
-        tr = (
-            s.withColumn("y1", F.lead(dst).over(w))
-            .filter(F.col("y1").isNotNull())
-            .select(
-                F.col("y1"),
-                F.col(dst).alias("y0"),
-                F.col(src).alias("x0"),
-            )
-        )
-        c3 = tr.groupBy("y1", "y0", "x0").agg(F.count(F.lit(1)).alias("c"))
-        # joint/marginal counts by re-aggregating the O(8)-row triple table
-        c_y0x0 = c3.groupBy("y0", "x0").agg(F.sum("c").alias("c_yx"))
-        c_y1y0 = c3.groupBy("y1", "y0").agg(F.sum("c").alias("c_y1y"))
-        c_y0 = c3.groupBy("y0").agg(F.sum("c").alias("c_y"))
-        tot = c3.agg(F.sum("c").alias("n"))
-        te = (
-            c3.join(c_y0x0, ["y0", "x0"])
-            .join(c_y1y0, ["y1", "y0"])
-            .join(c_y0, ["y0"])
-            .crossJoin(F.broadcast(tot))
-            .agg(
-                F.max("n").alias("n_transitions"),
-                F.round(
-                    F.sum(
-                        F.col("c")
-                        / F.col("n").cast("double")
-                        * F.log(
-                            (F.col("c") * F.col("c_y").cast("double"))
-                            / (F.col("c_yx") * F.col("c_y1y").cast("double"))
-                        )
-                    ),
-                    6,
-                ).alias("te"),
-            )
-            .select(F.lit(direction).alias("direction"), "n_transitions", "te")
-        )
-        legs.append(te)
-    return legs[0].unionAll(legs[1]).orderBy("direction")
-
-
-def _transfer_entropy_sql() -> str:
-    legs = []
-    for direction, src, dst in (("b->a", "sb", "sa"), ("a->b", "sa", "sb")):
-        legs.append(f"""
-            SELECT '{direction}' AS direction, n_transitions, te FROM (
-                SELECT CAST(MAX(n) AS BIGINT) AS n_transitions,
-                       ROUND(SUM(c / CAST(n AS DOUBLE)
-                             * LN((c * CAST(c_y AS DOUBLE))
-                                  / (c_yx * CAST(c_y1y AS DOUBLE)))), 6) AS te
-                FROM (
-                    SELECT c3.*, cyx.c_yx, cyy.c_y1y, cy.c_y, tt.n
-                    FROM (SELECT y1, y0, x0, CAST(COUNT(*) AS BIGINT) AS c
-                          FROM tr_{src} GROUP BY 1, 2, 3) c3
-                    JOIN (SELECT y0, x0, CAST(COUNT(*) AS BIGINT) AS c_yx
-                          FROM tr_{src} GROUP BY 1, 2) cyx USING (y0, x0)
-                    JOIN (SELECT y1, y0, CAST(COUNT(*) AS BIGINT) AS c_y1y
-                          FROM tr_{src} GROUP BY 1, 2) cyy USING (y1, y0)
-                    JOIN (SELECT y0, CAST(COUNT(*) AS BIGINT) AS c_y
-                          FROM tr_{src} GROUP BY 1) cy USING (y0)
-                    CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS n
-                                FROM tr_{src}) tt))""")
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH {_top2_cell_series_sql()},
-        bin AS (
-            SELECT h,
-                   CASE WHEN xa > 0 THEN 1 ELSE 0 END AS sa,
-                   CASE WHEN xb > 0 THEN 1 ELSE 0 END AS sb
-            FROM series),
-        led AS (
-            SELECT sa, sb,
-                   LEAD(sa) OVER (ORDER BY h) AS la,
-                   LEAD(sb) OVER (ORDER BY h) AS lb
-            FROM bin),
-        tr_sb AS MATERIALIZED (
-            SELECT la AS y1, sa AS y0, sb AS x0 FROM led
-            WHERE la IS NOT NULL),
-        tr_sa AS MATERIALIZED (
-            SELECT lb AS y1, sb AS y0, sa AS x0 FROM led
-            WHERE lb IS NOT NULL)
-        SELECT * FROM ({union}) ORDER BY direction
-    """
-
-
-def q_granger_causality(spark, sf_dir):
-    """Bivariate Granger causality between the two most active res-1
-    tiles' hourly COUNT series, both directions: unrestricted VAR(1)
-    y_t = α + β·y_{{t−1}} + γ·x_{{t−1}} vs restricted (γ = 0), closed-form
-    OLS through centered moments solved by an exact 2×2 cross-multiplied
-    determinant — every moment N·Σab − Σa·Σb is an exact BIGINT (hourly
-    counts are integers), the float tail is the β/γ/RSS/F arithmetic.
-    F = (RSS_r − RSS_u)(T−3)/RSS_u with 1 restriction.
-
-    Scale shape: one (cell, hour) agg + broadcast rank join + ONE lag
-    window + one scalar moment agg per direction (union of 2)."""
-    from pyspark.sql import Window
-
-    s = _top2_cell_series(spark, sf_dir)
-    w = Window.orderBy("h")
-    lagged = (
-        s.withColumn("la", F.lag("xa").over(w))
-        .withColumn("lb", F.lag("xb").over(w))
-        .filter(F.col("la").isNotNull())
-    )
-    legs = []
-    for direction, ycol, ylag, xlag in (
-        ("b->a", "xa", "la", "lb"),
-        ("a->b", "xb", "lb", "la"),
-    ):
-        m = lagged.agg(
-            F.count(F.lit(1)).alias("t"),
-            F.sum(ycol).alias("sy"),
-            F.sum(ylag).alias("sl"),
-            F.sum(xlag).alias("sx"),
-            F.sum(F.col(ycol) * F.col(ycol)).alias("syy"),
-            F.sum(F.col(ycol) * F.col(ylag)).alias("syl"),
-            F.sum(F.col(ycol) * F.col(xlag)).alias("syx"),
-            F.sum(F.col(ylag) * F.col(ylag)).alias("sll"),
-            F.sum(F.col(xlag) * F.col(xlag)).alias("sxx"),
-            F.sum(F.col(ylag) * F.col(xlag)).alias("slx"),
-        )
-        t = F.col("t")
-        moments = m.select(
-            F.lit(direction).alias("direction"),
-            t.alias("t_obs"),
-            (t * F.col("syy") - F.col("sy") * F.col("sy")).alias("cyy"),
-            (t * F.col("syl") - F.col("sy") * F.col("sl")).alias("cyl"),
-            (t * F.col("syx") - F.col("sy") * F.col("sx")).alias("cyx"),
-            (t * F.col("sll") - F.col("sl") * F.col("sl")).alias("cll"),
-            (t * F.col("sxx") - F.col("sx") * F.col("sx")).alias("cxx"),
-            (t * F.col("slx") - F.col("sl") * F.col("sx")).alias("clx"),
-        )
-        # each centered moment is an exact BIGINT < 2^53; cast BEFORE the
-        # products — moment×moment would overflow BIGINT at large SF
-        cyl_d = F.col("cyl").cast("double")
-        cyx_d = F.col("cyx").cast("double")
-        cll_d = F.col("cll").cast("double")
-        cxx_d = F.col("cxx").cast("double")
-        clx_d = F.col("clx").cast("double")
-        det = cll_d * cxx_d - clx_d * clx_d
-        beta = (cyl_d * cxx_d - cyx_d * clx_d) / det
-        gamma = (cyx_d * cll_d - cyl_d * clx_d) / det
-        rss_u = F.col("cyy") - beta * F.col("cyl") - gamma * F.col("cyx")
-        rss_r = (
-            F.col("cyy")
-            - F.col("cyl") * F.col("cyl").cast("double") / F.col("cll")
-        )
-        leg = moments.select(
-            "direction",
-            "t_obs",
-            F.round(rss_u / F.col("t_obs").cast("double"), 6).alias("rss_u_n"),
-            F.round(rss_r / F.col("t_obs").cast("double"), 6).alias("rss_r_n"),
-            F.round(
-                (rss_r - rss_u) * (F.col("t_obs") - 3) / rss_u, 6
-            ).alias("f_stat"),
-        )
-        legs.append(leg)
-    return legs[0].unionAll(legs[1]).orderBy("direction")
-
-
-def _granger_causality_sql() -> str:
-    legs = []
-    for direction, ycol, ylag, xlag in (
-        ("b->a", "xa", "la", "lb"),
-        ("a->b", "xb", "lb", "la"),
-    ):
-        legs.append(f"""
-            SELECT '{direction}' AS direction, t_obs,
-                   ROUND((cyy - beta * cyl - gam * cyx)
-                         / CAST(t_obs AS DOUBLE), 6) AS rss_u_n,
-                   ROUND((cyy - cyl * CAST(cyl AS DOUBLE) / cll)
-                         / CAST(t_obs AS DOUBLE), 6) AS rss_r_n,
-                   ROUND(((cyy - cyl * CAST(cyl AS DOUBLE) / cll)
-                          - (cyy - beta * cyl - gam * cyx))
-                         * (t_obs - 3)
-                         / (cyy - beta * cyl - gam * cyx), 6) AS f_stat
-            FROM (
-                SELECT t_obs, cyy, cyl, cyx, cll,
-                       (CAST(cyl AS DOUBLE) * cxx
-                        - CAST(cyx AS DOUBLE) * clx) / det AS beta,
-                       (CAST(cyx AS DOUBLE) * cll
-                        - CAST(cyl AS DOUBLE) * clx) / det AS gam
-                FROM (
-                    -- moments are exact BIGINTs < 2^53; products go through
-                    -- DOUBLE (moment x moment overflows BIGINT at large SF)
-                    SELECT t AS t_obs,
-                           t * syy - sy * sy AS cyy,
-                           t * syl - sy * sl AS cyl,
-                           t * syx - sy * sx AS cyx,
-                           t * sll - sl * sl AS cll,
-                           t * sxx - sx * sx AS cxx,
-                           t * slx - sl * sx AS clx,
-                           CAST(t * sll - sl * sl AS DOUBLE)
-                               * (t * sxx - sx * sx)
-                               - CAST(t * slx - sl * sx AS DOUBLE)
-                               * (t * slx - sl * sx) AS det
-                    FROM (
-                        SELECT CAST(COUNT(*) AS BIGINT) AS t,
-                               CAST(SUM({ycol}) AS BIGINT) AS sy,
-                               CAST(SUM({ylag}) AS BIGINT) AS sl,
-                               CAST(SUM({xlag}) AS BIGINT) AS sx,
-                               CAST(SUM({ycol} * {ycol}) AS BIGINT) AS syy,
-                               CAST(SUM({ycol} * {ylag}) AS BIGINT) AS syl,
-                               CAST(SUM({ycol} * {xlag}) AS BIGINT) AS syx,
-                               CAST(SUM({ylag} * {ylag}) AS BIGINT) AS sll,
-                               CAST(SUM({xlag} * {xlag}) AS BIGINT) AS sxx,
-                               CAST(SUM({ylag} * {xlag}) AS BIGINT) AS slx
-                        FROM lagged)))""")
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH {_top2_cell_series_sql()},
-        lagged AS MATERIALIZED (
-            SELECT * FROM (
-                SELECT xa, xb,
-                       LAG(xa) OVER (ORDER BY h) AS la,
-                       LAG(xb) OVER (ORDER BY h) AS lb
-                FROM series)
-            WHERE la IS NOT NULL)
-        SELECT * FROM ({union}) ORDER BY direction
-    """
-
-
-def q_permutation_entropy(spark, sf_dir):
-    """Permutation entropy (Bandt-Pompe, m = 3) of the global dense hourly
-    event-count series — the ordinal-complexity screen beside
-    `block_entropy` (symbolic) and `sample_entropy` (metric): each
-    consecutive triple maps to one of 6 ordinal patterns with the
-    standard earlier-index-wins tie rule (lexicographic on (value,
-    index)), H = −Σ p ln p over exact pattern counts, normalized by
-    ln 6. One row per pattern (count, p) so the full distribution is
-    pinned, entropy carried on every row's scalar column.
-
-    Scale shape: one hour agg + calendar-bounded ladder + ONE ordered
-    window with two leads + an O(6) agg."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    occ = ev.select(hour.alias("h")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    span = occ.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = (
-        span.select(F.explode(F.sequence("h0", "h1")).alias("h"))
-        .join(occ, "h", "left")
-        .select("h", F.coalesce("x", F.lit(0)).alias("x"))
-    )
-    w = Window.orderBy("h")
-    tri = (
-        dense.withColumn("b", F.lead("x", 1).over(w))
-        .withColumn("c", F.lead("x", 2).over(w))
-        .filter(F.col("c").isNotNull())
-        .select(F.col("x").alias("a"), "b", "c")
-    )
-    a, b, c = F.col("a"), F.col("b"), F.col("c")
-    # lexicographic (value, index): a ≤' b ⇔ a ≤ b (idx 0 < 1); c <' b ⇔
-    # c < b (idx 2 > 1) — ties always resolve to the earlier index
-    pattern = (
-        F.when((a <= b) & (b <= c), "012")
-        .when((a <= c) & (c < b), "021")
-        .when((b < a) & (a <= c), "102")
-        .when((b <= c) & (c < a), "120")
-        .when((c < a) & (a <= b), "201")
-        .otherwise("210")
-    )
-    cnt = tri.groupBy(pattern.alias("pattern")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    tot = cnt.agg(F.sum("n").alias("nt"))
-    ent = (
-        cnt.crossJoin(F.broadcast(tot))
-        .agg(
-            F.round(
-                F.sum(
-                    -F.col("n")
-                    / F.col("nt").cast("double")
-                    * F.log(F.col("n") / F.col("nt").cast("double"))
-                ),
-                6,
-            ).alias("h_perm")
-        )
-    )
-    return (
-        cnt.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(ent))
-        .select(
-            "pattern",
-            "n",
-            F.round(F.col("n") / F.col("nt").cast("double"), 6).alias("p"),
-            "h_perm",
-            F.round(F.col("h_perm") / F.log(F.lit(6.0)), 6).alias("h_norm"),
-        )
-        .orderBy("pattern")
-    )
-
-
-def _permutation_entropy_sql() -> str:
-    return """
-        WITH hrs AS (
-            SELECT CAST(FLOOR(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                       AS BIGINT) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hrs),
-        dense AS (
-            SELECT g.h, COALESCE(hrs.x, 0) AS x
-            FROM (SELECT UNNEST(range(h0, h1 + 1)) AS h FROM span) g
-            LEFT JOIN hrs USING (h)),
-        tri AS (
-            SELECT x AS a,
-                   LEAD(x, 1) OVER (ORDER BY h) AS b,
-                   LEAD(x, 2) OVER (ORDER BY h) AS c
-            FROM dense
-            QUALIFY c IS NOT NULL),
-        pat AS (
-            SELECT CASE
-                WHEN a <= b AND b <= c THEN '012'
-                WHEN a <= c AND c < b THEN '021'
-                WHEN b < a AND a <= c THEN '102'
-                WHEN b <= c AND c < a THEN '120'
-                WHEN c < a AND a <= b THEN '201'
-                ELSE '210' END AS pattern
-            FROM tri),
-        cnt AS (SELECT pattern, CAST(COUNT(*) AS BIGINT) AS n
-                FROM pat GROUP BY 1),
-        tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nt FROM cnt),
-        ent AS (
-            SELECT ROUND(SUM(-n / CAST(nt AS DOUBLE)
-                          * LN(n / CAST(nt AS DOUBLE))), 6) AS h_perm
-            FROM cnt CROSS JOIN tot)
-        SELECT pattern, n,
-               ROUND(n / CAST(nt AS DOUBLE), 6) AS p,
-               h_perm,
-               ROUND(h_perm / LN(6.0), 6) AS h_norm
-        FROM cnt CROSS JOIN tot CROSS JOIN ent
-        ORDER BY pattern
-    """
-
-
-def q_sample_entropy(spark, sf_dir):
-    """Sample entropy (m = 2) of the dense hourly event-count series —
-    the metric regularity screen (low SampEn = predictable rhythm)
-    beside `permutation_entropy` (ordinal) and `recurrence_quant`
-    (thresholded): SampEn = −ln(A/B) with B = Chebyshev-matching
-    template pairs of length 2 and A of length 3, tolerance r pinned as
-    the exact p20 order statistic of the nonzero absolute first
-    differences (an INTEGER — no float σ knife-edge). Templates run
-    i ∈ [0, n−3] for both lengths so A ⊆ B pairs exactly.
-
-    Scale shape: series and pair table are calendar-bounded (~720 rows →
-    ~260k pairs) — constant in data size, one ordered window + one
-    bounded self-join."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    occ = ev.select(hour.alias("h")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    span = occ.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = (
-        span.select(F.explode(F.sequence("h0", "h1")).alias("h"))
-        .join(occ, "h", "left")
-        .select("h", F.coalesce("x", F.lit(0)).alias("x"))
-    )
-    w = Window.orderBy("h")
-    tpl = (
-        dense.withColumn("x1", F.lead("x", 1).over(w))
-        .withColumn("x2", F.lead("x", 2).over(w))
-        .filter(F.col("x2").isNotNull())
-        .select("h", "x", "x1", "x2")
-        .localCheckpoint(eager=True)
-    )
-    diffs = tpl.select(F.abs(F.col("x1") - F.col("x")).alias("d")).filter(
-        F.col("d") > 0
-    )
-    per = diffs.groupBy("d").agg(F.count(F.lit(1)).alias("c"))
-    wd = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    tot = per.agg(F.sum("c").alias("n"))
-    r = (
-        per.withColumn("cum", F.sum("c").over(wd))
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("cum") * 5 >= F.col("n"))
-        .agg(F.min("d").alias("r"))
-    )
-    a_t = tpl.alias("a")
-    b_t = tpl.alias("b")
-    pairs = (
-        a_t.join(b_t, F.col("a.h") < F.col("b.h"))
-        .crossJoin(F.broadcast(r))
-        .select(
-            (
-                F.greatest(
-                    F.abs(F.col("a.x") - F.col("b.x")),
-                    F.abs(F.col("a.x1") - F.col("b.x1")),
-                )
-                <= F.col("r")
-            )
-            .cast("long")
-            .alias("m2"),
-            (
-                F.greatest(
-                    F.abs(F.col("a.x") - F.col("b.x")),
-                    F.abs(F.col("a.x1") - F.col("b.x1")),
-                    F.abs(F.col("a.x2") - F.col("b.x2")),
-                )
-                <= F.col("r")
-            )
-            .cast("long")
-            .alias("m3"),
-        )
-    )
-    agg = pairs.agg(
-        F.sum("m2").alias("b_count"), F.sum("m3").alias("a_count")
-    )
-    return (
-        agg.crossJoin(F.broadcast(r))
-        .select(
-            "r",
-            "b_count",
-            "a_count",
-            F.round(
-                -F.log(F.col("a_count") / F.col("b_count").cast("double")), 6
-            ).alias("sampen"),
-        )
-    )
-
-
-def _sample_entropy_sql() -> str:
-    return """
-        WITH hrs AS (
-            SELECT CAST(FLOOR(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                       AS BIGINT) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hrs),
-        dense AS (
-            SELECT g.h, COALESCE(hrs.x, 0) AS x
-            FROM (SELECT UNNEST(range(h0, h1 + 1)) AS h FROM span) g
-            LEFT JOIN hrs USING (h)),
-        tpl AS MATERIALIZED (
-            SELECT h, x,
-                   LEAD(x, 1) OVER (ORDER BY h) AS x1,
-                   LEAD(x, 2) OVER (ORDER BY h) AS x2
-            FROM dense
-            QUALIFY x2 IS NOT NULL),
-        per AS (
-            SELECT ABS(x1 - x) AS d, CAST(COUNT(*) AS BIGINT) AS c
-            FROM tpl WHERE ABS(x1 - x) > 0 GROUP BY 1),
-        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM per),
-        r AS (
-            SELECT MIN(d) AS r
-            FROM (SELECT d, SUM(c) OVER (ORDER BY d
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND CURRENT ROW) AS cum
-                  FROM per) CROSS JOIN tot
-            WHERE cum * 5 >= n),
-        pairs AS (
-            SELECT CASE WHEN GREATEST(ABS(a.x - b.x), ABS(a.x1 - b.x1)) <= r
-                        THEN 1 ELSE 0 END AS m2,
-                   CASE WHEN GREATEST(ABS(a.x - b.x), ABS(a.x1 - b.x1),
-                                      ABS(a.x2 - b.x2)) <= r
-                        THEN 1 ELSE 0 END AS m3
-            FROM tpl a JOIN tpl b ON a.h < b.h
-            CROSS JOIN r),
-        agg AS (
-            SELECT CAST(SUM(m2) AS BIGINT) AS b_count,
-                   CAST(SUM(m3) AS BIGINT) AS a_count
-            FROM pairs)
-        SELECT r, b_count, a_count,
-               ROUND(-LN(a_count / CAST(b_count AS DOUBLE)), 6) AS sampen
-        FROM agg CROSS JOIN r
-    """
-
-
-# ---------------------------------------------------------------------------
-# long-memory, visibility, drift, rating replays (session 14)
-# ---------------------------------------------------------------------------
-
-_HURST_TAUS = (6, 12, 24, 48)
-
-
-def q_hurst_rs(spark, sf_dir):
-    """Hurst exponent of the dense hourly event-count series by classic
-    rescaled-range analysis: for each box size τ ∈ {6,12,24,48} split
-    into full boxes, R/S per box collapses to (max D − min D)/√V with
-    D_k = τ·cumsum − k·Σ_box and V = τ·Σx² − (Σx)² — BOTH exact BIGINTs
-    (the τ denominators cancel), so the ONLY float op per box is one
-    sqrt; H = the ln-ln OLS slope over the four (τ, mean R/S) points.
-    H ≈ 0.5 = memoryless, > 0.5 = persistent (daily rhythm). Per-τ rows
-    with the shared h_est column.
-
-    Scale shape: series is calendar-bounded; one window per (τ, box) +
-    two tiny aggs — constant work in data size."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    occ = ev.select(hour.alias("h")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    span = occ.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = (
-        span.select(F.explode(F.sequence("h0", "h1")).alias("h"), "h0")
-        .join(occ, "h", "left")
-        .select(
-            (F.col("h") - F.col("h0")).alias("i"),
-            F.coalesce("x", F.lit(0)).alias("x"),
-        )
-    )
-    taus = spark.createDataFrame([(t,) for t in _HURST_TAUS], "tau long")
-    n_tot = dense.agg(F.count(F.lit(1)).alias("n"))
-    boxed = (
-        dense.crossJoin(F.broadcast(taus))
-        .crossJoin(F.broadcast(n_tot))
-        .filter(F.col("i") < F.floor(F.col("n") / F.col("tau")) * F.col("tau"))
-        .withColumn("b", F.floor(F.col("i") / F.col("tau")))
-    )
-    wb = (
-        Window.partitionBy("tau", "b")
-        .orderBy("i")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wall = Window.partitionBy("tau", "b")
-    d = (
-        boxed.withColumn("cum", F.sum("x").over(wb))
-        .withColumn("sbox", F.sum("x").over(wall))
-        .withColumn("k", F.col("i") - F.col("b") * F.col("tau") + 1)
-        .select(
-            "tau",
-            "b",
-            "x",
-            (F.col("tau") * F.col("cum") - F.col("k") * F.col("sbox")).alias(
-                "dk"
-            ),
-        )
-    )
-    per_box = d.groupBy("tau", "b").agg(
-        (F.max("dk") - F.min("dk")).alias("r_num"),
-        (
-            F.first("tau") * F.sum(F.col("x") * F.col("x"))
-            - F.sum("x") * F.sum("x")
-        ).alias("v"),
-    )
-    per_tau = (
-        per_box.filter(F.col("v") > 0)
-        .groupBy("tau")
-        .agg(
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.round(
-                F.avg(F.round(F.col("r_num") / F.sqrt("v"), 9)), 6
-            ).alias("rs_mean"),
-        )
-    )
-    mom = per_tau.agg(
-        F.count(F.lit(1)).cast("double").alias("m"),
-        F.sum(F.log("tau")).alias("sx"),
-        F.sum(F.log("rs_mean")).alias("sy"),
-        F.sum(F.log("tau") * F.log("tau")).alias("sxx"),
-        F.sum(F.log("tau") * F.log("rs_mean")).alias("sxy"),
-    )
-    h_est = F.round(
-        (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy"))
-        / (F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")),
-        6,
-    )
-    return (
-        per_tau.crossJoin(F.broadcast(mom.select(h_est.alias("h_est"))))
-        .select("tau", "n_blocks", "rs_mean", "h_est")
-        .orderBy("tau")
-    )
-
-
-def _hurst_rs_sql() -> str:
-    taus = ", ".join(f"({t})" for t in _HURST_TAUS)
-    return f"""
-        WITH hrs AS (
-            SELECT CAST(FLOOR(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                       AS BIGINT) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hrs),
-        dense AS (
-            SELECT g.h - span.h0 AS i, COALESCE(hrs.x, 0) AS x
-            FROM (SELECT UNNEST(range(h0, h1 + 1)) AS h FROM span) g
-            LEFT JOIN hrs ON g.h = hrs.h
-            CROSS JOIN span),
-        nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM dense),
-        taus(tau) AS (VALUES {taus}),
-        boxed AS (
-            SELECT tau, i, x, CAST(FLOOR(i / tau) AS BIGINT) AS b
-            FROM dense CROSS JOIN taus CROSS JOIN nt
-            WHERE i < CAST(FLOOR(n / tau) AS BIGINT) * tau),
-        d AS (
-            SELECT tau, b, x,
-                   tau * SUM(x) OVER (PARTITION BY tau, b ORDER BY i
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - (i - b * tau + 1)
-                     * SUM(x) OVER (PARTITION BY tau, b) AS dk
-            FROM boxed),
-        per_box AS (
-            SELECT tau, b,
-                   CAST(MAX(dk) - MIN(dk) AS BIGINT) AS r_num,
-                   CAST(ANY_VALUE(tau) * SUM(x * x) - SUM(x) * SUM(x)
-                       AS BIGINT) AS v
-            FROM d GROUP BY tau, b),
-        per_tau AS MATERIALIZED (
-            SELECT tau, CAST(COUNT(*) AS BIGINT) AS n_blocks,
-                   ROUND(AVG(ROUND(r_num / SQRT(v), 9)), 6) AS rs_mean
-            FROM per_box WHERE v > 0 GROUP BY tau),
-        mom AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS m,
-                   SUM(LN(tau)) AS sx, SUM(LN(rs_mean)) AS sy,
-                   SUM(LN(tau) * LN(tau)) AS sxx,
-                   SUM(LN(tau) * LN(rs_mean)) AS sxy
-            FROM per_tau)
-        SELECT tau, n_blocks, rs_mean,
-               ROUND((m * sxy - sx * sy) / (m * sxx - sx * sx), 6) AS h_est
-        FROM per_tau CROSS JOIN mom
-        ORDER BY tau
-    """
-
-
-_VIS_HORIZON = 24
-
-
-def q_visibility_graph(spark, sf_dir):
-    """Natural visibility graph of the dense hourly event-count series
-    (horizon-bounded at 24 h): hours i < j connect iff every k between
-    them sits strictly below the (i,j) sightline — the cross-multiplied
-    ALL-INTEGER test x_k·(j−i) < x_i·(j−k) + x_j·(k−i), no float
-    geometry. Hub hours (top-20 by degree) expose spike structure: a
-    peak 'sees' far — the time-series-as-graph lens beside
-    `peak_prominence` (morphological) and `hourly_acf` (linear).
-
-    Scale shape: series calendar-bounded; pairs ≤ n·24, sightline
-    checks ≤ n·24·23/2 — constant in data size, one range join."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    occ = ev.select(hour.alias("h")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    span = occ.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = (
-        span.select(F.explode(F.sequence("h0", "h1")).alias("h"))
-        .join(occ, "h", "left")
-        .select("h", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    a = dense.select(F.col("h").alias("i"), F.col("x").alias("xi"))
-    b = dense.select(F.col("h").alias("j"), F.col("x").alias("xj"))
-    pairs = a.join(
-        b,
-        (F.col("j") > F.col("i")) & (F.col("j") <= F.col("i") + _VIS_HORIZON),
-    )
-    k = dense.select(F.col("h").alias("k"), F.col("x").alias("xk"))
-    blocked = (
-        pairs.join(k, (F.col("k") > F.col("i")) & (F.col("k") < F.col("j")))
-        .filter(
-            F.col("xk") * (F.col("j") - F.col("i"))
-            >= F.col("xi") * (F.col("j") - F.col("k"))
-            + F.col("xj") * (F.col("k") - F.col("i"))
-        )
-        .select("i", "j")
-        .distinct()
-    )
-    edges = pairs.join(blocked, ["i", "j"], "left_anti").select("i", "j")
-    deg = (
-        edges.select(F.col("i").alias("h"))
-        .unionAll(edges.select(F.col("j").alias("h")))
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    return deg.orderBy(F.desc("degree"), "h").limit(20)
-
-
-def _visibility_graph_sql() -> str:
-    return f"""
-        WITH hrs AS (
-            SELECT CAST(FLOOR(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                       AS BIGINT) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hrs),
-        dense AS MATERIALIZED (
-            SELECT g.h, COALESCE(hrs.x, 0) AS x
-            FROM (SELECT UNNEST(range(h0, h1 + 1)) AS h FROM span) g
-            LEFT JOIN hrs USING (h)),
-        pairs AS MATERIALIZED (
-            SELECT a.h AS i, a.x AS xi, b.h AS j, b.x AS xj
-            FROM dense a JOIN dense b
-              ON b.h > a.h AND b.h <= a.h + {_VIS_HORIZON}),
-        blocked AS (
-            SELECT DISTINCT i, j
-            FROM pairs JOIN dense k ON k.h > pairs.i AND k.h < pairs.j
-            WHERE k.x * (j - i) >= xi * (j - k.h) + xj * (k.h - i)),
-        edges AS (
-            SELECT i, j FROM pairs
-            ANTI JOIN blocked USING (i, j)),
-        deg AS (
-            SELECT h, CAST(COUNT(*) AS BIGINT) AS degree
-            FROM (SELECT i AS h FROM edges
-                  UNION ALL SELECT j AS h FROM edges)
-            GROUP BY h)
-        SELECT h, degree FROM deg
-        ORDER BY degree DESC, h LIMIT 20
-    """
-
-
-def _page_hinkley_step(dialect: str) -> str:
-    """One Page-Hinkley update on state [n, sum, m, minm, maxexc, alarms,
-    first_alarm] with element [x, lam]: m += x − mean_t (δ = 0), 6-dp per
-    step; alarm when m − min m > λ."""
-    if dialect == "spark":
-        el = "element_at(el, {})".format
-        ac = "element_at(acc, {})".format
-        arr = "array"
-    else:
-        el = "el[{}]".format
-        ac = "acc[{}]".format
-        arr = "list_value"
-    x, lam = el(1), el(2)
-    n, s, m, minm, maxexc, alarms, first = (ac(i) for i in range(1, 8))
-    n1 = f"({n} + 1.0)"
-    s1 = f"({s} + {x})"
-    m1 = f"round({m} + {x} - {s1} / {n1}, 6)"
-    return (
-        f"{arr}({n1}, {s1}, {m1}, least({minm}, {m1}), "
-        f"greatest({maxexc}, round({m1} - least({minm}, {m1}), 6)), "
-        f"{alarms} + (CASE WHEN round({m1} - least({minm}, {m1}), 6) > {lam} "
-        f"THEN 1.0 ELSE 0.0 END), "
-        f"CASE WHEN {first} >= 0.0 THEN {first} "
-        f"WHEN round({m1} - least({minm}, {m1}), 6) > {lam} THEN {n1} "
-        f"ELSE -1.0 END)"
-    )
-
-
-def q_page_hinkley(spark, sf_dir):
-    """Page-Hinkley mean-shift detector replayed over the dense hourly
-    event-count series — the BATCH drift screen beside the streaming
-    CUSUM/EWMA monitors: m_t accumulates deviations from the RUNNING
-    mean (δ = 0), alarming when m_t − min m exceeds λ = 5× the exact
-    integer p90 of |Δx| (order statistic by cross-multiplication — a
-    data-derived, float-free threshold). The whole replay is ONE
-    ordered array fold (aggregate ↔ list_reduce, step from one source,
-    6-dp per step). Output: n, λ, alarm count, first alarm index, max
-    excursion.
-
-    Scale shape: one hour agg + one bounded fold — constant state."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    occ = ev.select(hour.alias("h")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    span = occ.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = (
-        span.select(F.explode(F.sequence("h0", "h1")).alias("h"))
-        .join(occ, "h", "left")
-        .select("h", F.coalesce("x", F.lit(0)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    w = Window.orderBy("h")
-    diffs = (
-        dense.withColumn("prev", F.lag("x").over(w))
-        .filter(F.col("prev").isNotNull())
-        .select(F.abs(F.col("x") - F.col("prev")).alias("d"))
-    )
-    per = diffs.groupBy("d").agg(F.count(F.lit(1)).alias("c"))
-    wd = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    tot = per.agg(F.sum("c").alias("n"))
-    lam = (
-        per.withColumn("cum", F.sum("c").over(wd))
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("cum") * 10 >= F.col("n") * 9)
-        .agg((F.min("d") * 5).cast("double").alias("lam"))
-    )
-    series = dense.crossJoin(F.broadcast(lam)).groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("h", "x", "lam"))),
-            lambda s: F.array(s["x"].cast("double"), s["lam"]),
-        ).alias("els"),
-        F.first("lam").alias("lam"),
-    )
-    folded = series.withColumn(
-        "res",
-        F.expr(
-            "aggregate(els, array(0.0D, 0.0D, 0.0D, 0.0D, 0.0D, 0.0D, -1.0D), "
-            f"(acc, el) -> {_page_hinkley_step('spark')})"
-        ),
-    )
-    return folded.select(
-        F.element_at("res", 1).cast("long").alias("n"),
-        F.round("lam", 6).alias("lam"),
-        F.element_at("res", 6).cast("long").alias("n_alarms"),
-        F.element_at("res", 7).cast("long").alias("first_alarm_i"),
-        F.round(F.element_at("res", 5), 6).alias("max_excursion"),
-    )
-
-
-def _page_hinkley_sql() -> str:
-    return f"""
-        WITH hrs AS (
-            SELECT CAST(FLOOR(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                       AS BIGINT) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hrs),
-        dense AS MATERIALIZED (
-            SELECT g.h, COALESCE(hrs.x, 0) AS x
-            FROM (SELECT UNNEST(range(h0, h1 + 1)) AS h FROM span) g
-            LEFT JOIN hrs USING (h)),
-        diffs AS (
-            SELECT ABS(x - LAG(x) OVER (ORDER BY h)) AS d
-            FROM dense QUALIFY d IS NOT NULL),
-        per AS (SELECT d, CAST(COUNT(*) AS BIGINT) AS c
-                FROM diffs GROUP BY d),
-        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM per),
-        lam AS (
-            SELECT CAST(MIN(d) * 5 AS DOUBLE) AS lam
-            FROM (SELECT d, SUM(c) OVER (ORDER BY d
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND CURRENT ROW) AS cum
-                  FROM per) CROSS JOIN tot
-            WHERE cum * 10 >= n * 9),
-        series AS (
-            SELECT list_transform(
-                       list_sort(list(struct_pack(h := h, x := x,
-                                                  lam := lam))),
-                       s -> [CAST(s.x AS DOUBLE), s.lam]) AS els,
-                   ANY_VALUE(lam) AS lam
-            FROM dense CROSS JOIN lam),
-        folded AS (
-            SELECT lam,
-                   list_reduce(
-                       list_prepend([0.0, 0.0, 0.0, 0.0, 0.0, 0.0, -1.0],
-                                    els),
-                       (acc, el) -> {_page_hinkley_step('duckdb')}) AS res
-            FROM series)
-        SELECT CAST(res[1] AS BIGINT) AS n,
-               ROUND(lam, 6) AS lam,
-               CAST(res[6] AS BIGINT) AS n_alarms,
-               CAST(res[7] AS BIGINT) AS first_alarm_i,
-               ROUND(res[5], 6) AS max_excursion
-        FROM folded
-    """
-
-
-def _elo_step(dialect: str) -> str:
-    """One Elo update on state [ra, rb] with element [s] (score of A):
-    e = 1/(1+10^((rb−ra)/400)) rounded 9 dp, K = 32, ratings 6 dp."""
-    if dialect == "spark":
-        s, ra, rb, arr = (
-            "element_at(el, 1)",
-            "element_at(acc, 1)",
-            "element_at(acc, 2)",
-            "array",
-        )
-    else:
-        s, ra, rb, arr = "el[1]", "acc[1]", "acc[2]", "list_value"
-    e = f"round(1.0 / (1.0 + power(10.0, ({rb} - {ra}) / 400.0)), 9)"
-    return (
-        f"{arr}(round({ra} + 32.0 * ({s} - {e}), 6), "
-        f"round({rb} - 32.0 * ({s} - {e}), 6))"
-    )
-
-
-def q_elo_replay(spark, sf_dir):
-    """Elo rating replay over the daily head-to-head between the two most
-    active res-1 tiles (win = higher daily count, draw = tie): the
-    sequential pairwise-strength ladder beside the batch `bradley_terry`
-    MM fit — order matters here (a late winning streak outweighs an
-    early one). Expected score via 10^(Δ/400), K = 32, per-step 9/6-dp
-    rounding; the whole replay is ONE ordered array fold. Output: days,
-    win/draw counts, final ratings.
-
-    Scale shape: one (cell, hour) agg + broadcast rank join + one
-    day agg + one bounded fold."""
-    s = _top2_cell_series(spark, sf_dir)
-    days = (
-        s.groupBy(F.floor(F.col("h") / 24).alias("d"))
-        .agg(F.sum("xa").alias("xa"), F.sum("xb").alias("xb"))
-        .select(
-            "d",
-            F.when(F.col("xa") > F.col("xb"), 1.0)
-            .when(F.col("xa") < F.col("xb"), 0.0)
-            .otherwise(0.5)
-            .alias("s"),
-        )
-    )
-    series = days.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "s"))),
-            lambda r: F.array(r["s"]),
-        ).alias("els")
-    )
-    folded = series.withColumn(
-        "res",
-        F.expr(
-            "aggregate(els, array(1500.0D, 1500.0D), "
-            f"(acc, el) -> {_elo_step('spark')})"
-        ),
-    )
-    return folded.select(
-        F.size("els").alias("n_days"),
-        F.expr("size(filter(els, e -> element_at(e, 1) = 1.0))").alias(
-            "wins_a"
-        ),
-        F.expr("size(filter(els, e -> element_at(e, 1) = 0.0))").alias(
-            "wins_b"
-        ),
-        F.expr("size(filter(els, e -> element_at(e, 1) = 0.5))").alias(
-            "draws"
-        ),
-        F.round(F.element_at("res", 1), 6).alias("elo_a"),
-        F.round(F.element_at("res", 2), 6).alias("elo_b"),
-    )
-
-
-def _elo_replay_sql() -> str:
-    return f"""
-        WITH {_top2_cell_series_sql()},
-        days AS (
-            SELECT CAST(FLOOR(h / 24) AS BIGINT) AS d,
-                   CAST(CASE WHEN SUM(xa) > SUM(xb) THEN 1.0
-                             WHEN SUM(xa) < SUM(xb) THEN 0.0
-                             ELSE 0.5 END AS DOUBLE) AS s
-            FROM series GROUP BY 1),
-        ser AS (
-            SELECT list_transform(
-                       list_sort(list(struct_pack(d := d, s := s))),
-                       r -> [r.s]) AS els
-            FROM days),
-        folded AS (
-            SELECT els,
-                   list_reduce(list_prepend(CAST([1500.0, 1500.0]
-                                                 AS DOUBLE[]), els),
-                       (acc, el) -> {_elo_step('duckdb')}) AS res
-            FROM ser)
-        SELECT CAST(len(els) AS BIGINT) AS n_days,
-               CAST(len(list_filter(els, e -> e[1] = 1.0)) AS BIGINT)
-                   AS wins_a,
-               CAST(len(list_filter(els, e -> e[1] = 0.0)) AS BIGINT)
-                   AS wins_b,
-               CAST(len(list_filter(els, e -> e[1] = 0.5)) AS BIGINT)
-                   AS draws,
-               ROUND(res[1], 6) AS elo_a,
-               ROUND(res[2], 6) AS elo_b
-        FROM folded
-    """
-
-
-# ---------------------------------------------------------------------------
-# coreset selection, multi-criteria ranking, HMM scoring, independence
-# (session 14)
-# ---------------------------------------------------------------------------
-
-_KCENTER_K = 6
-
-
-def _int_xy_cols(doc_id_col):
-    """The INTEGER lattice coordinates behind _latlng_cols (ix = h mod
-    1700, iy = ⌊h/1700⌋ mod 3580) — exact BIGINTs, so geometric selection
-    rules (k-center, farthest-point) run with zero float ops."""
-    h = F.pmod(doc_id_col.cast("long") * F.lit(_HM), F.lit(_HMOD))
-    return F.pmod(h, F.lit(1700)), F.pmod(F.floor(h / F.lit(1700)), F.lit(3580))
-
-
-def _int_xy_sql(doc_expr: str) -> tuple[str, str]:
-    h = f"(({doc_expr} * {_HM}) % {_HMOD})"
-    return f"({h} % 1700)", f"(CAST(FLOOR({h} / 1700) AS BIGINT) % 3580)"
-
-
-def q_kcenter_coreset(spark, sf_dir):
-    """Gonzalez greedy k-center over the documents' distinct integer
-    lattice points — the geometric CORESET selector (pick k maximally
-    spread representatives; the farthest-point twin of `semdedup`'s
-    centroid dedup and the seeding step of k-center clustering). Seed =
-    lexicographically smallest point; each round adds the point with
-    max min-distance² to the selected set (ties → smallest (ix, iy)).
-    EVERY distance is an exact BIGINT — zero float ops anywhere. Row i
-    reports d2 = its distance² to the first i−1 picks, i.e. the exact
-    covering radius² of the (i−1)-set.
-
-    Scale shape: the MLlib-style iterative recipe — O(k) selected
-    points live on the driver as literals, each round is ONE codegen
-    least()-projection + TakeOrderedAndProject(1); k·rounds scans, no
-    shuffle of the points, nothing data-sized collected."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    ix, iy = _int_xy_cols(F.col("doc_id"))
-    pts = d.select(ix.alias("ix"), iy.alias("iy")).distinct().localCheckpoint(
-        eager=True
-    )
-    first = pts.orderBy("ix", "iy").limit(1).collect()[0]
-    sel = [(int(first["ix"]), int(first["iy"]))]
-    rows = [(1, sel[0][0], sel[0][1], 0)]
-    for rank in range(2, _KCENTER_K + 1):
-        dists = [
-            (F.col("ix") - F.lit(sx)) * (F.col("ix") - F.lit(sx))
-            + (F.col("iy") - F.lit(sy)) * (F.col("iy") - F.lit(sy))
-            for sx, sy in sel
-        ]
-        dist = dists[0] if len(dists) == 1 else F.least(*dists)
-        far = (
-            pts.select("ix", "iy", dist.alias("d2"))
-            .orderBy(F.desc("d2"), "ix", "iy")
-            .limit(1)
-            .collect()[0]
-        )
-        sel.append((int(far["ix"]), int(far["iy"])))
-        rows.append((rank, sel[-1][0], sel[-1][1], int(far["d2"])))
-    return spark.createDataFrame(
-        rows, "rank int, ix bigint, iy bigint, d2 bigint"
-    ).orderBy("rank")
-
-
-def _kcenter_coreset_sql() -> str:
-    ix, iy = _int_xy_sql("doc_id")
-    ctes = [
-        f"pts AS MATERIALIZED (SELECT DISTINCT {ix} AS ix, {iy} AS iy"
-        " FROM documents)",
-        "s1 AS (SELECT 1 AS rank, ix, iy, CAST(0 AS BIGINT) AS d2"
-        " FROM pts ORDER BY ix, iy LIMIT 1)",
-        "sel1 AS (SELECT ix, iy FROM s1)",
-    ]
-    for i in range(2, _KCENTER_K + 1):
-        ctes.append(
-            f"""s{i} AS (
-            SELECT {i} AS rank, p.ix, p.iy,
-                   (SELECT MIN((p.ix - s.ix) * (p.ix - s.ix)
-                             + (p.iy - s.iy) * (p.iy - s.iy))
-                    FROM sel{i - 1} s) AS d2
-            FROM pts p
-            ORDER BY d2 DESC, p.ix, p.iy LIMIT 1)"""
-        )
-        ctes.append(
-            f"sel{i} AS (SELECT ix, iy FROM sel{i - 1}"
-            f" UNION ALL SELECT ix, iy FROM s{i})"
-        )
-    union = " UNION ALL ".join(
-        f"SELECT * FROM s{i}" for i in range(1, _KCENTER_K + 1)
-    )
-    return (
-        "WITH " + ",\n        ".join(ctes) + f"\n        {union} ORDER BY rank"
-    )
-
-
-def q_topsis_sites(spark, sf_dir):
-    """TOPSIS multi-criteria site ranking of res-2 tiles on three benefit
-    criteria — demand (event count), reach (distinct users), monetary
-    (exact integer-cent volume), weights (0.5, 0.3, 0.2) — the
-    closed-form MCDA decision layer over the per-tile aggregates
-    (`sfca_accessibility` scores supply, this ranks trade-offs): vector
-    normalization x/√Σx² (Σx² through DOUBLE per the BIGINT-overflow
-    discipline, each norm 9-dp), ideal best/worst per criterion, and
-    closeness C = d⁻/(d⁺ + d⁻), 6 dp. Top-10 (closeness desc, cell).
-
-    Scale shape: one grid-bounded agg + one broadcast scalar join; the
-    d± arithmetic is per-row over 3 columns — no pair joins."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id", "user_id", "value"
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    per = ev.groupBy(cell_encode_col(lat, lng, 2).alias("cell")).agg(
-        F.count(F.lit(1)).alias("demand"),
-        F.countDistinct("user_id").alias("reach"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("monetary"),
-    )
-    sq = per.agg(
-        *[
-            F.sum(F.col(c).cast("double") * F.col(c).cast("double")).alias(
-                f"s_{c}"
-            )
-            for c in ("demand", "reach", "monetary")
-        ]
-    )
-    w = {"demand": 0.5, "reach": 0.3, "monetary": 0.2}
-    norm = per.crossJoin(F.broadcast(sq)).select(
-        "cell",
-        "demand",
-        "reach",
-        "monetary",
-        *[
-            F.round(
-                F.lit(w[c]) * F.col(c) / F.sqrt(F.col(f"s_{c}")), 9
-            ).alias(f"r_{c}")
-            for c in ("demand", "reach", "monetary")
-        ],
-    )
-    ideal = norm.agg(
-        *[
-            f(F.col(c)).alias(n)
-            for c in ("r_demand", "r_reach", "r_monetary")
-            for f, n in ((F.max, f"best_{c}"), (F.min, f"worst_{c}"))
-        ]
-    )
-    j = norm.crossJoin(F.broadcast(ideal))
-    dplus = F.sqrt(
-        sum(
-            (F.col(f"r_{c}") - F.col(f"best_r_{c}"))
-            * (F.col(f"r_{c}") - F.col(f"best_r_{c}"))
-            for c in ("demand", "reach", "monetary")
-        )
-    )
-    dminus = F.sqrt(
-        sum(
-            (F.col(f"r_{c}") - F.col(f"worst_r_{c}"))
-            * (F.col(f"r_{c}") - F.col(f"worst_r_{c}"))
-            for c in ("demand", "reach", "monetary")
-        )
-    )
-    return (
-        j.select(
-            "cell",
-            "demand",
-            "reach",
-            "monetary",
-            F.round(dminus / (dplus + dminus), 6).alias("closeness"),
-        )
-        .orderBy(F.desc("closeness"), "cell")
-        .limit(10)
-    )
-
-
-def _topsis_sites_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    w = {"demand": 0.5, "reach": 0.3, "monetary": 0.2}
-    norms = ", ".join(
-        f"ROUND({w[c]} * {c} / SQRT(s_{c}), 9) AS r_{c}"
-        for c in ("demand", "reach", "monetary")
-    )
-    ideals = ", ".join(
-        f"{f}(r_{c}) AS {n}_r_{c}"
-        for c in ("demand", "reach", "monetary")
-        for f, n in (("MAX", "best"), ("MIN", "worst"))
-    )
-    dp = " + ".join(
-        f"(r_{c} - best_r_{c}) * (r_{c} - best_r_{c})"
-        for c in ("demand", "reach", "monetary")
-    )
-    dm = " + ".join(
-        f"(r_{c} - worst_r_{c}) * (r_{c} - worst_r_{c})"
-        for c in ("demand", "reach", "monetary")
-    )
-    return f"""
-        WITH per AS MATERIALIZED (
-            SELECT {cell} AS cell,
-                   CAST(COUNT(*) AS BIGINT) AS demand,
-                   CAST(COUNT(DISTINCT user_id) AS BIGINT) AS reach,
-                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-                       AS monetary
-            FROM events GROUP BY 1),
-        sq AS (
-            SELECT SUM(CAST(demand AS DOUBLE) * demand) AS s_demand,
-                   SUM(CAST(reach AS DOUBLE) * reach) AS s_reach,
-                   SUM(CAST(monetary AS DOUBLE) * monetary) AS s_monetary
-            FROM per),
-        norm AS (
-            SELECT cell, demand, reach, monetary, {norms}
-            FROM per CROSS JOIN sq),
-        ideal AS (SELECT {ideals} FROM norm)
-        SELECT cell, demand, reach, monetary,
-               ROUND(SQRT({dm}) / (SQRT({dp}) + SQRT({dm})), 6) AS closeness
-        FROM norm CROSS JOIN ideal
-        ORDER BY closeness DESC, cell LIMIT 10
-    """
-
-
-# pinned 2-state HMM literals (engaged / casual): transition A, start π,
-# and per-event-type emission probabilities — shared by both engines
-_HMM_A = ((0.8, 0.2), (0.3, 0.7))
-_HMM_PI = (0.6, 0.4)
-_HMM_B = {
-    "click": (0.30, 0.25),
-    "view": (0.30, 0.45),
-    "purchase": (0.20, 0.05),
-    "signup": (0.15, 0.05),
-    "error": (0.05, 0.20),
-}
-
-
-def _hmm_forward_step(dialect: str) -> str:
-    """One scaled forward-algorithm step on state [a1, a2, ll, t] with
-    element [b1, b2]: α' = (t = 0 ? π : A'α)∘b, then normalize and add
-    ln c to the log-likelihood; 9-dp per step."""
-    if dialect == "spark":
-        el = "element_at(el, {})".format
-        ac = "element_at(acc, {})".format
-        arr = "array"
-    else:
-        el = "el[{}]".format
-        ac = "acc[{}]".format
-        arr = "list_value"
-    b1, b2 = el(1), el(2)
-    a1, a2, ll, t = (ac(i) for i in range(1, 5))
-    (a11, a12), (a21, a22) = _HMM_A
-    p1, p2 = _HMM_PI
-    u1 = f"(CASE WHEN {t} = 0.0 THEN {p1!r} ELSE {a1} * {a11!r} + {a2} * {a21!r} END) * {b1}"
-    u2 = f"(CASE WHEN {t} = 0.0 THEN {p2!r} ELSE {a1} * {a12!r} + {a2} * {a22!r} END) * {b2}"
-    c = f"(({u1}) + ({u2}))"
-    return (
-        f"{arr}(round(({u1}) / {c}, 9), round(({u2}) / {c}, 9), "
-        f"round({ll} + ln({c}), 9), {t} + 1.0)"
-    )
-
-
-def _hmm_emission_case(dialect: str, state: int) -> str:
-    arms = " ".join(
-        f"WHEN '{k}' THEN CAST({v[state]!r} AS DOUBLE)"
-        for k, v in sorted(_HMM_B.items())
-    )
-    col = "event_type" if dialect == "spark" else "s.event_type"
-    return f"CASE {col} {arms} ELSE 0.04 END"
-
-
-def q_hmm_forward(spark, sf_dir):
-    """Scaled forward-algorithm log-likelihood of each user's ordered
-    event-type sequence under a pinned 2-state HMM (engaged/casual,
-    literal π/A/B) — the marginal-probability twin of `viterbi_match`
-    (which scores only the single best path): α rescaled each step so
-    ll = Σ ln c is exact fold arithmetic, 9-dp per step. Bottom-20
-    users by per-event log-likelihood = the behavioral anomalies no
-    single-path score separates. Sequence order is (ts, event_id).
-
-    Scale shape: one groupBy-user collect_list (bounded per-user
-    sequences) + per-row fold — embarrassingly parallel, no shuffle
-    beyond the user agg."""
-    ev = _read(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    case0 = " ".join(
-        f"WHEN '{k}' THEN CAST({v[0]!r} AS DOUBLE)"
-        for k, v in sorted(_HMM_B.items())
-    )
-    case1 = " ".join(
-        f"WHEN '{k}' THEN CAST({v[1]!r} AS DOUBLE)"
-        for k, v in sorted(_HMM_B.items())
-    )
-    seq = ev.groupBy("user_id").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(ts, event_id, "
-            "event_type))), s -> array("
-            f"CASE s.event_type {case0} ELSE 0.04 END, "
-            f"CASE s.event_type {case1} ELSE 0.04 END))"
-        ).alias("els"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    folded = seq.withColumn(
-        "res",
-        F.expr(
-            "aggregate(els, array(0.0D, 0.0D, 0.0D, 0.0D), "
-            f"(acc, el) -> {_hmm_forward_step('spark')})"
-        ),
-    )
-    return (
-        folded.select(
-            "user_id",
-            "n_events",
-            F.round(F.element_at("res", 3), 6).alias("loglik"),
-            F.round(
-                F.element_at("res", 3) / F.col("n_events").cast("double"), 6
-            ).alias("ll_per_event"),
-        )
-        .orderBy("ll_per_event", "user_id")
-        .limit(20)
-    )
-
-
-def _hmm_forward_sql() -> str:
-    case0 = " ".join(
-        f"WHEN '{k}' THEN CAST({v[0]!r} AS DOUBLE)"
-        for k, v in sorted(_HMM_B.items())
-    )
-    case1 = " ".join(
-        f"WHEN '{k}' THEN CAST({v[1]!r} AS DOUBLE)"
-        for k, v in sorted(_HMM_B.items())
-    )
-    return f"""
-        WITH seq AS (
-            SELECT user_id,
-                   list_transform(
-                       list_sort(list(struct_pack(ts := ts,
-                                                  event_id := event_id,
-                                                  event_type := event_type))),
-                       s -> [CASE s.event_type {case0} ELSE 0.04 END,
-                             CASE s.event_type {case1} ELSE 0.04 END]) AS els,
-                   CAST(COUNT(*) AS BIGINT) AS n_events
-            FROM events GROUP BY user_id),
-        folded AS (
-            SELECT user_id, n_events,
-                   list_reduce(
-                       list_prepend(CAST([0.0, 0.0, 0.0, 0.0] AS DOUBLE[]),
-                                    els),
-                       (acc, el) -> {_hmm_forward_step('duckdb')}) AS res
-            FROM seq)
-        SELECT user_id, n_events,
-               ROUND(res[3], 6) AS loglik,
-               ROUND(res[3] / CAST(n_events AS DOUBLE), 6) AS ll_per_event
-        FROM folded
-        ORDER BY ll_per_event, user_id LIMIT 20
-    """
-
-
-def q_g_test(spark, sf_dir):
-    """G-test of independence (likelihood-ratio χ²) on the event_type ×
-    day-of-week contingency, with Pearson χ² and Cramér's V beside it —
-    the global-association summary the per-trend tests
-    (`cochran_armitage`, `mann_kendall`) don't give: G = 2·Σ O·ln(O·n /
-    (row·col)) on EXACT BIGINT counts (ln terms 9-dp), E = row·col/n,
-    V = √(χ²/(n·min(r−1, c−1))). One row: n, dof, g_stat, chi2,
-    cramers_v.
-
-    Scale shape: one contingency agg (≤ 35 cells) + broadcast margins."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_type", F.dayofweek("ts").alias("dow")
-    )
-    o = ev.groupBy("event_type", "dow").agg(F.count(F.lit(1)).alias("o"))
-    row = o.groupBy("event_type").agg(F.sum("o").alias("row_n"))
-    col = o.groupBy("dow").agg(F.sum("o").alias("col_n"))
-    tot = o.agg(
-        F.sum("o").alias("n"),
-        F.countDistinct("event_type").alias("r"),
-        F.countDistinct("dow").alias("c"),
-    )
-    j = (
-        o.join(F.broadcast(row), "event_type")
-        .join(F.broadcast(col), "dow")
-        .crossJoin(F.broadcast(tot))
-    )
-    e = F.col("row_n") * F.col("col_n") / F.col("n").cast("double")
-    terms = j.select(
-        "n",
-        "r",
-        "c",
-        F.round(
-            2.0
-            * F.col("o")
-            * F.log(
-                F.col("o")
-                * F.col("n").cast("double")
-                / (F.col("row_n") * F.col("col_n")).cast("double")
-            ),
-            9,
-        ).alias("g_term"),
-        F.round((F.col("o") - e) * (F.col("o") - e) / e, 9).alias(
-            "chi_term"
-        ),
-    )
-    agg = terms.groupBy("n", "r", "c").agg(
-        F.sum("g_term").alias("g"), F.sum("chi_term").alias("chi2")
-    )
-    return agg.select(
-        "n",
-        ((F.col("r") - 1) * (F.col("c") - 1)).alias("dof"),
-        F.round("g", 6).alias("g_stat"),
-        F.round("chi2", 6).alias("chi2"),
-        F.round(
-            F.sqrt(
-                F.col("chi2")
-                / (
-                    F.col("n")
-                    * F.least(F.col("r") - 1, F.col("c") - 1)
-                ).cast("double")
-            ),
-            6,
-        ).alias("cramers_v"),
-    )
-
-
-def _g_test_sql() -> str:
-    return """
-        WITH o AS (
-            SELECT event_type, dayofweek(ts) + 1 AS dow,
-                   CAST(COUNT(*) AS BIGINT) AS o
-            FROM events GROUP BY 1, 2),
-        row_m AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS row_n
-                  FROM o GROUP BY 1),
-        col_m AS (SELECT dow, CAST(SUM(o) AS BIGINT) AS col_n
-                  FROM o GROUP BY 1),
-        tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n,
-                       CAST(COUNT(DISTINCT event_type) AS BIGINT) AS r,
-                       CAST(COUNT(DISTINCT dow) AS BIGINT) AS c
-                FROM o),
-        terms AS (
-            SELECT n, r, c,
-                   ROUND(2.0 * o * LN(o * CAST(n AS DOUBLE)
-                                      / CAST(row_n * col_n AS DOUBLE)), 9)
-                       AS g_term,
-                   ROUND((o - row_n * col_n / CAST(n AS DOUBLE))
-                         * (o - row_n * col_n / CAST(n AS DOUBLE))
-                         / (row_n * col_n / CAST(n AS DOUBLE)), 9)
-                       AS chi_term
-            FROM o JOIN row_m USING (event_type)
-                   JOIN col_m USING (dow)
-                   CROSS JOIN tot),
-        agg AS (
-            SELECT n, r, c, SUM(g_term) AS g, SUM(chi_term) AS chi2
-            FROM terms GROUP BY 1, 2, 3)
-        SELECT n, (r - 1) * (c - 1) AS dof,
-               ROUND(g, 6) AS g_stat,
-               ROUND(chi2, 6) AS chi2,
-               ROUND(SQRT(chi2 / CAST(n * LEAST(r - 1, c - 1) AS DOUBLE)), 6)
-                   AS cramers_v
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# survival-area, 2x2 effect size, robust slope, clustering tendency
-# (session 14)
-# ---------------------------------------------------------------------------
-
-_RMST_TAU = 48.0
-
-
-def q_rmst(spark, sf_dir):
-    """Restricted mean survival time at τ = 48 h of per-user inter-event
-    gaps, split weekend vs weekday starts — the clinically standard
-    KM-curve summary (`kaplan_meier` gives the curve; RMST integrates
-    it): RMST(τ) = ∫₀^τ S(t)dt as the exact step-function area
-    Σ S(t₋)·Δt + tail, with S via the repo's exp∘cumsum∘ln 9-dp
-    protocol per group. Two rows (group, n_gaps, rmst) sharing the
-    weekend-minus-weekday difference column.
-
-    Scale shape: the KM shuffle (one per_t agg + ordered windows per
-    group) + an O(distinct t) area sum."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    endt = ev.agg(
-        F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("endu")
-    )
-    gaps = (
-        ev.select(
-            F.when(F.dayofweek("ts").isin(1, 7), "weekend")
-            .otherwise("weekday")
-            .alias("grp"),
-            ts_us.alias("t0"),
-            F.lead(ts_us).over(w).alias("t1"),
-        )
-        .crossJoin(F.broadcast(endt))
-        .select(
-            "grp",
-            F.round(
-                (F.coalesce("t1", "endu") - F.col("t0"))
-                / F.lit(3_600_000_000.0),
-                6,
-            ).alias("t"),
-            F.col("t1").isNotNull().cast("int").alias("event"),
-        )
-    )
-    per_t = gaps.groupBy("grp", "t").agg(
-        F.sum("event").cast("long").alias("d"),
-        F.count(F.lit(1)).cast("long").alias("obs"),
-    )
-    wg = Window.partitionBy("grp")
-    wt = Window.partitionBy("grp").orderBy("t").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    wc = Window.partitionBy("grp").orderBy("t").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    km = (
-        per_t.withColumn("n_tot", F.sum("obs").over(wg))
-        .withColumn(
-            "n_risk",
-            (F.col("n_tot") - F.coalesce(F.sum("obs").over(wt), F.lit(0))),
-        )
-        .filter(F.col("d") > 0)
-        .withColumn(
-            "lnterm",
-            F.when(
-                F.col("d") < F.col("n_risk"),
-                F.round(
-                    F.log(1.0 - F.col("d") / F.col("n_risk").cast("double")),
-                    9,
-                ),
-            ).otherwise(F.lit(None)),
-        )
-        .withColumn(
-            "s",
-            F.when(F.col("d") == F.col("n_risk"), F.lit(0.0)).otherwise(
-                F.round(F.exp(F.round(F.sum("lnterm").over(wc), 9)), 6)
-            ),
-        )
-    )
-    we = Window.partitionBy("grp").orderBy("t")
-    steps = km.select(
-        "grp",
-        "t",
-        "s",
-        F.lag("t", 1, 0.0).over(we).alias("t_prev"),
-        F.lag("s", 1, 1.0).over(we).alias("s_prev"),
-    ).filter(F.col("t") <= _RMST_TAU)
-    area = steps.groupBy("grp").agg(
-        F.round(
-            F.sum(
-                F.round(
-                    F.col("s_prev") * (F.col("t") - F.col("t_prev")), 9
-                )
-            ),
-            9,
-        ).alias("head"),
-        F.max("t").alias("t_last"),
-        F.max_by("s", "t").alias("s_last"),
-    )
-    n_per = gaps.groupBy("grp").agg(F.count(F.lit(1)).alias("n_gaps"))
-    rmst = (
-        area.join(n_per, "grp")
-        .select(
-            "grp",
-            "n_gaps",
-            F.round(
-                F.col("head")
-                + F.col("s_last") * (F.lit(_RMST_TAU) - F.col("t_last")),
-                6,
-            ).alias("rmst"),
-        )
-    )
-    diff = (
-        rmst.groupBy()
-        .pivot("grp", ["weekend", "weekday"])
-        .agg(F.first("rmst"))
-        .select(
-            F.round(F.col("weekend") - F.col("weekday"), 6).alias("rmst_diff")
-        )
-    )
-    return rmst.crossJoin(F.broadcast(diff)).orderBy("grp")
-
-
-def _rmst_sql() -> str:
-    return f"""
-        WITH ev AS (
-            SELECT event_id, ts, user_id,
-                   CASE WHEN dayofweek(ts) IN (0, 6) THEN 'weekend'
-                        ELSE 'weekday' END AS grp,
-                   epoch_us(CAST(ts AS TIMESTAMP)) AS t0
-            FROM events),
-        endt AS (SELECT MAX(t0) AS endu FROM ev),
-        gaps AS (
-            SELECT grp,
-                   ROUND((COALESCE(t1, endu) - t0) / 3600000000.0, 6) AS t,
-                   CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS event
-            FROM (SELECT grp, t0,
-                         LEAD(t0) OVER (PARTITION BY user_id
-                             ORDER BY ts, event_id) AS t1
-                  FROM ev)
-            CROSS JOIN endt),
-        per_t AS (
-            SELECT grp, t, CAST(SUM(event) AS BIGINT) AS d,
-                   CAST(COUNT(*) AS BIGINT) AS obs
-            FROM gaps GROUP BY 1, 2),
-        km AS (
-            SELECT grp, t, d, n_risk,
-                   CASE WHEN d = n_risk THEN 0.0
-                        ELSE ROUND(EXP(ROUND(SUM(
-                            CASE WHEN d < n_risk
-                                 THEN ROUND(LN(1.0 - d / CAST(n_risk
-                                                AS DOUBLE)), 9)
-                            END) OVER (PARTITION BY grp ORDER BY t
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW), 9)), 6) END AS s
-            FROM (
-                SELECT grp, t, d,
-                       SUM(obs) OVER (PARTITION BY grp)
-                       - COALESCE(SUM(obs) OVER (PARTITION BY grp ORDER BY t
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING), 0) AS n_risk
-                FROM per_t)
-            WHERE d > 0),
-        steps AS (
-            SELECT grp, t, s,
-                   LAG(t, 1, 0.0) OVER (PARTITION BY grp ORDER BY t)
-                       AS t_prev,
-                   LAG(s, 1, 1.0) OVER (PARTITION BY grp ORDER BY t)
-                       AS s_prev
-            FROM km
-            QUALIFY t <= {_RMST_TAU!r}),
-        area AS (
-            SELECT grp,
-                   ROUND(SUM(ROUND(s_prev * (t - t_prev), 9)), 9) AS head,
-                   MAX(t) AS t_last,
-                   ARG_MAX(s, t) AS s_last
-            FROM steps GROUP BY grp),
-        n_per AS (SELECT grp, CAST(COUNT(*) AS BIGINT) AS n_gaps
-                  FROM gaps GROUP BY grp),
-        rmst AS (
-            SELECT area.grp, n_gaps,
-                   ROUND(head + s_last * ({_RMST_TAU!r} - t_last), 6) AS rmst
-            FROM area JOIN n_per ON area.grp = n_per.grp),
-        diff AS (
-            SELECT ROUND(
-                MAX(CASE WHEN grp = 'weekend' THEN rmst END)
-                - MAX(CASE WHEN grp = 'weekday' THEN rmst END), 6)
-                AS rmst_diff
-            FROM rmst)
-        SELECT grp, n_gaps, rmst, rmst_diff
-        FROM rmst CROSS JOIN diff ORDER BY grp
-    """
-
-
-def q_odds_ratio(spark, sf_dir):
-    """Odds ratio of conversion (purchase/signup) on weekend vs weekday
-    with the Woolf logit 95% CI — the effect-size companion to
-    `ab_proportions` (which tests, this sizes): OR = ad/bc on EXACT
-    BIGINT cells, ln OR ± 1.96·√(1/a+1/b+1/c+1/d). One contingency
-    agg."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.dayofweek("ts").isin(1, 7).cast("long").alias("wkd"),
-        F.col("event_type").isin("purchase", "signup").cast("long").alias(
-            "conv"
-        ),
-    )
-    agg = ev.agg(
-        F.sum(F.col("wkd") * F.col("conv")).alias("a"),
-        F.sum(F.col("wkd") * (1 - F.col("conv"))).alias("b"),
-        F.sum((1 - F.col("wkd")) * F.col("conv")).alias("c"),
-        F.sum((1 - F.col("wkd")) * (1 - F.col("conv"))).alias("d"),
-    )
-    lnor = F.log(
-        (F.col("a") * F.col("d")).cast("double")
-        / (F.col("b") * F.col("c")).cast("double")
-    )
-    se = F.sqrt(
-        1.0 / F.col("a") + 1.0 / F.col("b") + 1.0 / F.col("c")
-        + 1.0 / F.col("d")
-    )
-    return agg.select(
-        "a",
-        "b",
-        "c",
-        "d",
-        F.round(F.exp(lnor), 6).alias("odds_ratio"),
-        F.round(F.exp(lnor - 1.96 * se), 6).alias("ci_lo"),
-        F.round(F.exp(lnor + 1.96 * se), 6).alias("ci_hi"),
-    )
-
-
-def _odds_ratio_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
-                       AS wkd,
-                   CASE WHEN event_type IN ('purchase', 'signup')
-                        THEN 1 ELSE 0 END AS conv
-            FROM events),
-        agg AS (
-            SELECT CAST(SUM(wkd * conv) AS BIGINT) AS a,
-                   CAST(SUM(wkd * (1 - conv)) AS BIGINT) AS b,
-                   CAST(SUM((1 - wkd) * conv) AS BIGINT) AS c,
-                   CAST(SUM((1 - wkd) * (1 - conv)) AS BIGINT) AS d
-            FROM ev)
-        SELECT a, b, c, d,
-               ROUND(EXP(LN(CAST(a * d AS DOUBLE) / CAST(b * c AS DOUBLE))),
-                     6) AS odds_ratio,
-               ROUND(EXP(LN(CAST(a * d AS DOUBLE) / CAST(b * c AS DOUBLE))
-                         - 1.96 * SQRT(1.0 / a + 1.0 / b + 1.0 / c
-                                       + 1.0 / d)), 6) AS ci_lo,
-               ROUND(EXP(LN(CAST(a * d AS DOUBLE) / CAST(b * c AS DOUBLE))
-                         + 1.96 * SQRT(1.0 / a + 1.0 / b + 1.0 / c
-                                       + 1.0 / d)), 6) AS ci_hi
-        FROM agg
-    """
-
-
-def q_siegel_slopes(spark, sf_dir):
-    """Siegel repeated-median slope of the daily event-count trend — the
-    50%-breakdown robust regressor (Theil-Sen, already in
-    `theil_sen_cells`, breaks at 29%; the repeated median survives
-    half the days being corrupted): slope = med_i med_{j≠i}
-    (x_j−x_i)/(j−i), intercept = med_i (x_i − slope·i), every median
-    the DETERMINISTIC lower median (position ⌈m/2⌉ by row_number,
-    ties broken by the partner index). Days are calendar-bounded, so
-    the pair table is O(days²).
-
-    Scale shape: one day agg + a bounded self-join + two rank
-    windows — constant in data size."""
-    from pyspark.sql import Window
-
-    days = (
-        _read(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    wd = Window.orderBy("day")
-    idx = days.select(
-        (F.row_number().over(wd) - 1).alias("i"), "x"
-    ).localCheckpoint(eager=True)
-    a, b = idx.alias("a"), idx.alias("b")
-    slopes = a.join(b, F.col("a.i") != F.col("b.i")).select(
-        F.col("a.i").alias("i"),
-        F.col("b.i").alias("j"),
-        (
-            (F.col("b.x") - F.col("a.x")).cast("double")
-            / (F.col("b.i") - F.col("a.i")).cast("double")
-        ).alias("s"),
-    )
-    wm = Window.partitionBy("i").orderBy("s", "j")
-    wn = Window.partitionBy("i")
-    med_i = (
-        slopes.withColumn("rn", F.row_number().over(wm))
-        .withColumn("m", F.count(F.lit(1)).over(wn))
-        .filter(F.col("rn") * 2 == F.col("m") + F.pmod(F.col("m"), F.lit(2)))
-        .select("i", F.col("s").alias("med_s"))
-    )
-    wg = Window.orderBy("med_s", "i")
-    slope = (
-        med_i.withColumn("rn", F.row_number().over(wg))
-        .crossJoin(
-            F.broadcast(med_i.agg(F.count(F.lit(1)).alias("n")))
-        )
-        .filter(
-            F.col("rn") * 2 == F.col("n") + F.pmod(F.col("n"), F.lit(2))
-        )
-        .select(F.col("med_s").alias("slope"), "n")
-    )
-    wi = Window.orderBy("r", "i")
-    icept = (
-        idx.crossJoin(F.broadcast(slope))
-        .select(
-            "i",
-            "n",
-            "slope",
-            F.round(F.col("x") - F.col("slope") * F.col("i"), 9).alias("r"),
-        )
-        .withColumn("rn", F.row_number().over(wi))
-        .filter(
-            F.col("rn") * 2 == F.col("n") + F.pmod(F.col("n"), F.lit(2))
-        )
-        .select(
-            F.col("n").alias("n_days"),
-            F.round("slope", 6).alias("slope"),
-            F.round("r", 6).alias("intercept"),
-        )
-    )
-    return icept
-
-
-def _siegel_slopes_sql() -> str:
-    return """
-        WITH days AS (
-            SELECT date_trunc('day', ts) AS day,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        idx AS MATERIALIZED (
-            SELECT ROW_NUMBER() OVER (ORDER BY day) - 1 AS i, x
-            FROM days),
-        slopes AS (
-            SELECT a.i, b.i AS j,
-                   CAST(b.x - a.x AS DOUBLE)
-                   / CAST(b.i - a.i AS DOUBLE) AS s
-            FROM idx a JOIN idx b ON a.i != b.i),
-        med_i AS MATERIALIZED (
-            SELECT i, s AS med_s
-            FROM (SELECT i, j, s,
-                         ROW_NUMBER() OVER (PARTITION BY i
-                             ORDER BY s, j) AS rn,
-                         COUNT(*) OVER (PARTITION BY i) AS m
-                  FROM slopes)
-            WHERE rn * 2 = m + m % 2),
-        slope AS (
-            SELECT med_s AS slope, n
-            FROM (SELECT med_s, i,
-                         ROW_NUMBER() OVER (ORDER BY med_s, i) AS rn
-                  FROM med_i)
-            CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM med_i)
-            WHERE rn * 2 = n + n % 2)
-        SELECT n AS n_days,
-               ROUND(slope, 6) AS slope,
-               ROUND(r, 6) AS intercept
-        FROM (SELECT n, slope, r,
-                     ROW_NUMBER() OVER (ORDER BY r, i) AS rn
-              FROM (SELECT i, n, slope,
-                           ROUND(x - slope * i, 9) AS r
-                    FROM idx CROSS JOIN slope))
-        WHERE rn * 2 = n + n % 2
-    """
-
-
-_HOPKINS_M = 64
-
-
-def q_hopkins_statistic(spark, sf_dir):
-    """Hopkins clustering-tendency statistic of the documents' distinct
-    integer lattice points — the pre-clustering sanity gate (H ≈ 0.5 =
-    uniform, → 1 = clustered; run BEFORE trusting `kmeans_geo` or
-    `st_dbscan` output): u = Σ NN-d² from m deterministic probe points
-    (hash lattice, literal arithmetic), w = Σ NN-d² from m
-    pseudo-randomly hash-ranked data points to their nearest OTHER
-    point, H = u/(u + w) — an EXACT integer ratio (the d² variant),
-    one float division. No RNG anywhere.
-
-    Scale shape: two m×n broadcast nested-loop min-joins (m = 64
-    literal probes) — linear scans, no pair blowup."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    ix, iy = _int_xy_cols(F.col("doc_id"))
-    pts = d.select(ix.alias("ix"), iy.alias("iy")).distinct().localCheckpoint(
-        eager=True
-    )
-    probes = spark.range(1, _HOPKINS_M + 1).select(
-        F.pmod(F.col("id") * 997, F.lit(1700)).alias("px"),
-        F.pmod(F.col("id") * 1543, F.lit(3580)).alias("py"),
-    )
-    u = (
-        pts.crossJoin(F.broadcast(probes))
-        .groupBy("px", "py")
-        .agg(
-            F.min(
-                (F.col("ix") - F.col("px")) * (F.col("ix") - F.col("px"))
-                + (F.col("iy") - F.col("py")) * (F.col("iy") - F.col("py"))
-            ).alias("d2")
-        )
-        .agg(F.sum("d2").alias("u2"))
-    )
-    samp = (
-        pts.orderBy(
-            F.pmod(
-                F.col("ix") * 1000003 + F.col("iy") * 7919, F.lit(104729)
-            ),
-            "ix",
-            "iy",
-        )
-        .limit(_HOPKINS_M)
-        .select(F.col("ix").alias("sx"), F.col("iy").alias("sy"))
-    )
-    wmin = (
-        pts.crossJoin(F.broadcast(samp))
-        .filter((F.col("ix") != F.col("sx")) | (F.col("iy") != F.col("sy")))
-        .groupBy("sx", "sy")
-        .agg(
-            F.min(
-                (F.col("ix") - F.col("sx")) * (F.col("ix") - F.col("sx"))
-                + (F.col("iy") - F.col("sy")) * (F.col("iy") - F.col("sy"))
-            ).alias("d2")
-        )
-        .agg(F.sum("d2").alias("w2"))
-    )
-    return (
-        u.crossJoin(wmin)
-        .select(
-            F.col("u2"),
-            F.col("w2"),
-            F.round(
-                F.col("u2") / (F.col("u2") + F.col("w2")).cast("double"), 6
-            ).alias("hopkins"),
-        )
-    )
-
-
-def _hopkins_statistic_sql() -> str:
-    ix, iy = _int_xy_sql("doc_id")
-    return f"""
-        WITH pts AS MATERIALIZED (
-            SELECT DISTINCT {ix} AS ix, {iy} AS iy FROM documents),
-        probes AS (
-            SELECT (i * 997) % 1700 AS px, (i * 1543) % 3580 AS py
-            FROM (SELECT UNNEST(range(1, {_HOPKINS_M + 1})) AS i)),
-        u AS (
-            SELECT CAST(SUM(d2) AS BIGINT) AS u2
-            FROM (SELECT px, py,
-                         MIN((ix - px) * (ix - px)
-                           + (iy - py) * (iy - py)) AS d2
-                  FROM pts CROSS JOIN probes GROUP BY px, py)),
-        samp AS (
-            SELECT ix AS sx, iy AS sy FROM pts
-            ORDER BY (ix * 1000003 + iy * 7919) % 104729, ix, iy
-            LIMIT {_HOPKINS_M}),
-        w AS (
-            SELECT CAST(SUM(d2) AS BIGINT) AS w2
-            FROM (SELECT sx, sy,
-                         MIN((ix - sx) * (ix - sx)
-                           + (iy - sy) * (iy - sy)) AS d2
-                  FROM pts CROSS JOIN samp
-                  WHERE ix != sx OR iy != sy
-                  GROUP BY sx, sy))
-        SELECT u2, w2,
-               ROUND(u2 / CAST(u2 + w2 AS DOUBLE), 6) AS hopkins
-        FROM u CROSS JOIN w
-    """
-
-
-# ---------------------------------------------------------------------------
-# LISA Geary, item-item CF, segment clipping, phonetic blocking
-# (session 14)
-# ---------------------------------------------------------------------------
-
-
-def q_local_geary(spark, sf_dir):
-    """Anselin Local Geary c per occupied res-5 cell — the DISTANCE-based
-    LISA beside `local_moran`'s cross-product: squares the focal-ring
-    value gaps, so the HL/LH discontinuities Moran can cancel to ~0
-    score HIGH here. See operators/spatial_stats.py (local_geary)."""
-    from raptor_service_spark.operators.spatial_stats import local_geary
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    return local_geary(
-        d.withColumn("lat", lat).withColumn("lng", lng), res=5
-    )
-
-
-def _local_geary_sql() -> str:
-    from raptor_service_spark.operators.spatial_stats import local_geary_sql
-
-    lat, lng = _latlng_sql("doc_id")
-    return local_geary_sql("documents", lat, lng, res=5)
-
-
-def q_item_item_cf(spark, sf_dir):
-    """Item-item collaborative filtering over the user × res-3-tile visit
-    matrix — the recommender lens on mobility (`user_colocation` relates
-    users; this relates PLACES through shared visitors): cell-cell
-    cosine from EXACT BIGINT co-visit dot products, then top-5 unvisited
-    tiles per the 3 most active users, scored Σ sim·visits over the
-    user's own tiles. Ties → smaller cell.
-
-    Scale shape: the classic CF dataflow — one (user, cell) agg, a
-    per-user self-join bounded by per-user tile fanout (never
-    all-pairs-of-cells), broadcast norms, one top-k window."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    v = (
-        ev.groupBy(
-            "user_id", cell_encode_col(lat, lng, 3).alias("cell")
-        )
-        .agg(F.count(F.lit(1)).alias("v"))
-        .localCheckpoint(eager=True)
-    )
-    norms = v.groupBy("cell").agg(
-        F.sum(F.col("v") * F.col("v")).alias("ss")
-    )
-    dots = (
-        v.alias("a")
-        .join(v.alias("b"), "user_id")
-        .filter(F.col("a.cell") != F.col("b.cell"))
-        .groupBy(
-            F.col("a.cell").alias("c1"), F.col("b.cell").alias("c2")
-        )
-        .agg(F.sum(F.col("a.v") * F.col("b.v")).alias("dot"))
-    )
-    sims = (
-        dots.join(
-            F.broadcast(norms.select(F.col("cell").alias("c1"),
-                                     F.col("ss").alias("ss1"))), "c1"
-        )
-        .join(
-            F.broadcast(norms.select(F.col("cell").alias("c2"),
-                                     F.col("ss").alias("ss2"))), "c2"
-        )
-        .select(
-            "c1",
-            "c2",
-            F.round(
-                F.col("dot")
-                / (F.sqrt(F.col("ss1").cast("double"))
-                   * F.sqrt(F.col("ss2").cast("double"))),
-                9,
-            ).alias("sim"),
-        )
-    )
-    top_users = (
-        v.groupBy("user_id")
-        .agg(F.sum("v").alias("n"))
-        .orderBy(F.desc("n"), "user_id")
-        .limit(3)
-        .select("user_id")
-    )
-    mine = v.join(F.broadcast(top_users), "user_id")
-    scores = (
-        mine.join(sims, mine["cell"] == sims["c1"])
-        .join(
-            mine.select(
-                F.col("user_id").alias("u2"), F.col("cell").alias("seen")
-            ),
-            (F.col("user_id") == F.col("u2"))
-            & (F.col("c2") == F.col("seen")),
-            "left_anti",
-        )
-        .groupBy("user_id", F.col("c2").alias("cell"))
-        .agg(F.round(F.sum(F.round(F.col("sim") * F.col("v"), 9)), 6).alias(
-            "score"
-        ))
-    )
-    w = Window.partitionBy("user_id").orderBy(F.desc("score"), "cell")
-    return (
-        scores.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("user_id", "cell", "score", "rk")
-        .orderBy("user_id", "rk")
-    )
-
-
-def _item_item_cf_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH v AS MATERIALIZED (
-            SELECT user_id, {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS v
-            FROM events GROUP BY 1, 2),
-        norms AS (SELECT cell, CAST(SUM(v * v) AS BIGINT) AS ss
-                  FROM v GROUP BY cell),
-        dots AS (
-            SELECT a.cell AS c1, b.cell AS c2,
-                   CAST(SUM(a.v * b.v) AS BIGINT) AS dot
-            FROM v a JOIN v b USING (user_id)
-            WHERE a.cell != b.cell
-            GROUP BY 1, 2),
-        sims AS (
-            SELECT c1, c2,
-                   ROUND(dot / (SQRT(CAST(n1.ss AS DOUBLE))
-                                * SQRT(CAST(n2.ss AS DOUBLE))), 9) AS sim
-            FROM dots
-            JOIN norms n1 ON dots.c1 = n1.cell
-            JOIN norms n2 ON dots.c2 = n2.cell),
-        top_users AS (
-            SELECT user_id FROM v GROUP BY user_id
-            ORDER BY SUM(v) DESC, user_id LIMIT 3),
-        mine AS (SELECT v.* FROM v JOIN top_users USING (user_id)),
-        scores AS (
-            SELECT m.user_id, s.c2 AS cell,
-                   ROUND(SUM(ROUND(s.sim * m.v, 9)), 6) AS score
-            FROM mine m JOIN sims s ON m.cell = s.c1
-            WHERE NOT EXISTS (SELECT 1 FROM mine m2
-                              WHERE m2.user_id = m.user_id
-                                AND m2.cell = s.c2)
-            GROUP BY 1, 2)
-        SELECT user_id, cell, score, rk
-        FROM (SELECT user_id, cell, score,
-                     ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY score DESC, cell) AS rk
-              FROM scores)
-        WHERE rk <= 5
-        ORDER BY user_id, rk
-    """
-
-
-# literal clip window on the integer lattice (central half of each axis)
-_CLIP_WIN = (425, 1275, 895, 2685)  # xmin, xmax, ymin, ymax
-
-
-def q_line_clipping(spark, sf_dir):
-    """Liang-Barsky clipping of per-user consecutive-event segments
-    against a literal lattice window — the vector half of the
-    raster↔vector tile family (`polygon_polyfill` covers polygons; this
-    clips polylines for tile materialization): parametric t from the
-    four boundary (p, q) pairs — integer q/p single divisions, so the
-    doubles are bit-identical cross-engine — inside / clipped / outside
-    classification plus total clipped length (per-segment 9-dp).
-
-    Scale shape: one lead window per user + a codegen projection; no
-    joins, no pair blowup."""
-    from pyspark.sql import Window
-
-    xmin, xmax, ymin, ymax = _CLIP_WIN
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    ix, iy = _int_xy_cols(F.col("event_id"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seg = (
-        ev.select("user_id", "ts", "event_id", ix.alias("x0"), iy.alias("y0"))
-        .withColumn("x1", F.lead("x0").over(w))
-        .withColumn("y1", F.lead("y0").over(w))
-        .filter(F.col("x1").isNotNull())
-        .select(
-            F.col("x0"),
-            F.col("y0"),
-            F.col("x1"),
-            F.col("y1"),
-            (F.col("x1") - F.col("x0")).alias("dx"),
-            (F.col("y1") - F.col("y0")).alias("dy"),
-        )
-    )
-    pq = [
-        (-F.col("dx"), F.col("x0") - F.lit(xmin)),
-        (F.col("dx"), F.lit(xmax) - F.col("x0")),
-        (-F.col("dy"), F.col("y0") - F.lit(ymin)),
-        (F.col("dy"), F.lit(ymax) - F.col("y0")),
-    ]
-    t0 = F.greatest(
-        F.lit(0.0),
-        *[
-            F.when(p < 0, q.cast("double") / p.cast("double")).otherwise(0.0)
-            for p, q in pq
-        ],
-    )
-    t1 = F.least(
-        F.lit(1.0),
-        *[
-            F.when(p > 0, q.cast("double") / p.cast("double")).otherwise(1.0)
-            for p, q in pq
-        ],
-    )
-    par_out = None
-    for p, q in pq:
-        c = (p == 0) & (q < 0)
-        par_out = c if par_out is None else (par_out | c)
-    lab = seg.select(
-        "dx",
-        "dy",
-        t0.alias("t0"),
-        t1.alias("t1"),
-        F.when(par_out | (t0 > t1), "outside")
-        .when((t0 == 0.0) & (t1 == 1.0), "inside")
-        .otherwise("clipped")
-        .alias("cls"),
-    )
-    return (
-        lab.groupBy()
-        .agg(
-            F.count(F.lit(1)).alias("n_segments"),
-            F.sum((F.col("cls") == "inside").cast("long")).alias("n_inside"),
-            F.sum((F.col("cls") == "clipped").cast("long")).alias(
-                "n_clipped"
-            ),
-            F.sum((F.col("cls") == "outside").cast("long")).alias(
-                "n_outside"
-            ),
-            F.round(
-                F.sum(
-                    F.when(
-                        F.col("cls") != "outside",
-                        F.round(
-                            F.sqrt(
-                                (
-                                    F.col("dx") * F.col("dx")
-                                    + F.col("dy") * F.col("dy")
-                                ).cast("double")
-                            )
-                            * (F.col("t1") - F.col("t0")),
-                            9,
-                        ),
-                    ).otherwise(0.0)
-                ),
-                6,
-            ).alias("clipped_len"),
-        )
-    )
-
-
-def _line_clipping_sql() -> str:
-    xmin, xmax, ymin, ymax = _CLIP_WIN
-    ix, iy = _int_xy_sql("event_id")
-    pq = [
-        ("-dx", f"x0 - {xmin}"),
-        ("dx", f"{xmax} - x0"),
-        ("-dy", f"y0 - {ymin}"),
-        ("dy", f"{ymax} - y0"),
-    ]
-    t0 = ", ".join(
-        f"CASE WHEN {p} < 0 THEN CAST({q} AS DOUBLE) / ({p}) ELSE 0.0 END"
-        for p, q in pq
-    )
-    t1 = ", ".join(
-        f"CASE WHEN {p} > 0 THEN CAST({q} AS DOUBLE) / ({p}) ELSE 1.0 END"
-        for p, q in pq
-    )
-    par = " OR ".join(f"({p} = 0 AND {q} < 0)" for p, q in pq)
-    return f"""
-        WITH pts AS (
-            SELECT user_id, ts, event_id, {ix} AS x0, {iy} AS y0
-            FROM events),
-        seg AS (
-            SELECT x0, y0, x1, y1, x1 - x0 AS dx, y1 - y0 AS dy
-            FROM (SELECT x0, y0,
-                         LEAD(x0) OVER (PARTITION BY user_id
-                             ORDER BY ts, event_id) AS x1,
-                         LEAD(y0) OVER (PARTITION BY user_id
-                             ORDER BY ts, event_id) AS y1,
-                         user_id
-                  FROM pts)
-            WHERE x1 IS NOT NULL),
-        lb AS (
-            SELECT dx, dy,
-                   GREATEST(0.0, {t0}) AS t0,
-                   LEAST(1.0, {t1}) AS t1,
-                   ({par}) AS par_out
-            FROM seg),
-        lab AS (
-            SELECT dx, dy, t0, t1,
-                   CASE WHEN par_out OR t0 > t1 THEN 'outside'
-                        WHEN t0 = 0.0 AND t1 = 1.0 THEN 'inside'
-                        ELSE 'clipped' END AS cls
-            FROM lb)
-        SELECT CAST(COUNT(*) AS BIGINT) AS n_segments,
-               CAST(SUM(CASE WHEN cls = 'inside' THEN 1 ELSE 0 END)
-                   AS BIGINT) AS n_inside,
-               CAST(SUM(CASE WHEN cls = 'clipped' THEN 1 ELSE 0 END)
-                   AS BIGINT) AS n_clipped,
-               CAST(SUM(CASE WHEN cls = 'outside' THEN 1 ELSE 0 END)
-                   AS BIGINT) AS n_outside,
-               ROUND(SUM(CASE WHEN cls != 'outside'
-                   THEN ROUND(SQRT(CAST(dx * dx + dy * dy AS DOUBLE))
-                              * (t1 - t0), 9)
-                   ELSE 0.0 END), 6) AS clipped_len
-        FROM lab
-    """
-
-
-def _soundex_expr(dialect: str, col: str) -> str:
-    """Simplified American Soundex (vowel/H/W/Y → 0, no H/W-separator
-    merge rule) generated from ONE source for both engines — parity by
-    construction: first letter + first 3 nonzero digit codes of the
-    rest, adjacent duplicates collapsed, zero-padded."""
-    mapped = (
-        f"translate(upper(substring({col}, 2)), "
-        "'BFPVCGJKQSXZDTLMNRAEIOUYHW', "
-        "'11112222222233455600000000')"
-    )
-    # adjacent-duplicate collapse as a per-digit run-replace chain —
-    # DuckDB's RE2 engine has no backreferences, so '(\\d)\\1+' silently
-    # never matches there; 'd+'→'d' per digit is engine-portable
-    dedup = mapped
-    for d in "0123456":
-        flag = "" if dialect == "spark" else ", 'g'"
-        dedup = f"regexp_replace({dedup}, '{d}+', '{d}'{flag})"
-    digits = f"replace({dedup}, '0', '')"
-    return (
-        f"concat(upper(substring({col}, 1, 1)), "
-        f"substring(concat({digits}, '000'), 1, 3))"
-    )
-
-
-def q_soundex_blocking(spark, sf_dir):
-    """Phonetic (Soundex) blocking over the corpus vocabulary — the
-    classic ER blocking key beside the edit-distance
-    (`fuzzy_title_pairs`) and q-gram (`symspell_lookup`) families:
-    misspellings that SOUND alike land in one block even at edit
-    distance > 2. The code expression is generated from one source for
-    both engines (translate → backreference dedup → zero strip → pad).
-    Top-15 blocks by distinct-token count (ties → code), with the
-    lexicographic min/max member as the collision exhibit.
-
-    Scale shape: one explode + two aggs — codegen string ops end to
-    end, no UDF, no join."""
-    toks = (
-        _read(spark, sf_dir, "documents")
-        .select(F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok").rlike("^[a-z]{2,}$"))
-        .distinct()
-    )
-    coded = toks.select(
-        "tok", F.expr(_soundex_expr("spark", "tok")).alias("sdx")
-    )
-    return (
-        coded.groupBy("sdx")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.min("tok").alias("tok_min"),
-            F.max("tok").alias("tok_max"),
-        )
-        .orderBy(F.desc("n_tokens"), "sdx")
-        .limit(15)
-    )
-
-
-def _soundex_blocking_sql() -> str:
-    sdx = _soundex_expr("duckdb", "tok")
-    return f"""
-        WITH toks AS (
-            SELECT DISTINCT tok
-            FROM (SELECT UNNEST(string_split(text, ' ')) AS tok
-                  FROM documents)
-            WHERE regexp_full_match(tok, '[a-z]{{2,}}')),
-        coded AS (SELECT tok, {sdx} AS sdx FROM toks)
-        SELECT sdx, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-               MIN(tok) AS tok_min, MAX(tok) AS tok_max
-        FROM coded GROUP BY sdx
-        ORDER BY n_tokens DESC, sdx LIMIT 15
-    """
-
-
-# ---------------------------------------------------------------------------
-# MAUP audit, nested variance, cell kNN regression, EB shrinkage
-# (session 14)
-# ---------------------------------------------------------------------------
-
-
-def _doc_event_cells(spark, sf_dir, res: int):
-    """(cell, d, e) doc/event counts per occupied cell at `res` — full
-    outer with zero fill, shared by the cross-resolution audits."""
-    docs = _read(spark, sf_dir, "documents").select("doc_id")
-    dlat, dlng = _latlng_cols(F.col("doc_id"))
-    dc = docs.groupBy(cell_encode_col(dlat, dlng, res).alias("cell")).agg(
-        F.count(F.lit(1)).alias("d")
-    )
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    elat, elng = _latlng_cols(F.col("event_id"))
-    ec = ev.groupBy(cell_encode_col(elat, elng, res).alias("cell")).agg(
-        F.count(F.lit(1)).alias("e")
-    )
-    return dc.join(ec, "cell", "full_outer").select(
-        "cell",
-        F.coalesce("d", F.lit(0)).alias("d"),
-        F.coalesce("e", F.lit(0)).alias("e"),
-    )
-
-
-def _doc_event_cells_sql(res: int) -> str:
-    dlat, dlng = _latlng_sql("doc_id")
-    elat, elng = _latlng_sql("event_id")
-    dcell = cell_encode_sql(dlat, dlng, res)
-    ecell = cell_encode_sql(elat, elng, res)
-    return f"""(
-        SELECT COALESCE(dc.cell, ec.cell) AS cell,
-               COALESCE(dc.d, 0) AS d, COALESCE(ec.e, 0) AS e
-        FROM (SELECT {dcell} AS cell, CAST(COUNT(*) AS BIGINT) AS d
-              FROM documents GROUP BY 1) dc
-        FULL OUTER JOIN
-             (SELECT {ecell} AS cell, CAST(COUNT(*) AS BIGINT) AS e
-              FROM events GROUP BY 1) ec
-        ON dc.cell = ec.cell)"""
-
-
-_MAUP_RESOLUTIONS = (1, 2, 3)
-
-
-def q_maup_audit(spark, sf_dir):
-    """Modifiable-areal-unit-problem audit: the doc-density ↔
-    event-density Pearson r and OLS slope recomputed at res 1/2/3 —
-    the methodological health check every per-cell correlation in this
-    suite (gwr_cells, bivariate_moran, raster_crosstab) silently
-    depends on: if r swings across resolutions, cell-level conclusions
-    are aggregation artifacts. Moments are exact BIGINTs per
-    resolution (n·Σxy − ΣxΣy cross-multiplication, products through
-    DOUBLE per the overflow discipline); one row per resolution.
-
-    Scale shape: 3 independent grid-bounded (cell) aggs + scalar
-    moments — no joins beyond the per-res zero-fill outer."""
-    legs = []
-    for res in _MAUP_RESOLUTIONS:
-        cells = _doc_event_cells(spark, sf_dir, res)
-        m = cells.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("d").alias("sd"),
-            F.sum("e").alias("se"),
-            F.sum(F.col("d") * F.col("d")).alias("sdd"),
-            F.sum(F.col("e") * F.col("e")).alias("see"),
-            F.sum(F.col("d") * F.col("e")).alias("sde"),
-        )
-        n = F.col("n")
-        cde = (n * F.col("sde") - F.col("sd") * F.col("se")).cast("double")
-        cdd = (n * F.col("sdd") - F.col("sd") * F.col("sd")).cast("double")
-        cee = (n * F.col("see") - F.col("se") * F.col("se")).cast("double")
-        legs.append(
-            m.select(
-                F.lit(res).alias("res"),
-                n.alias("n_cells"),
-                F.round(cde / F.sqrt(cdd * cee), 6).alias("pearson_r"),
-                F.round(cde / cee, 6).alias("slope_d_on_e"),
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionAll(leg)
-    return out.orderBy("res")
-
-
-def _maup_audit_sql() -> str:
-    legs = []
-    for res in _MAUP_RESOLUTIONS:
-        legs.append(f"""
-            SELECT {res} AS res, n AS n_cells,
-                   ROUND(CAST(n * sde - sd * se AS DOUBLE)
-                         / SQRT(CAST(n * sdd - sd * sd AS DOUBLE)
-                                * (n * see - se * se)), 6) AS pearson_r,
-                   ROUND(CAST(n * sde - sd * se AS DOUBLE)
-                         / (n * see - se * se), 6) AS slope_d_on_e
-            FROM (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                         CAST(SUM(d) AS BIGINT) AS sd,
-                         CAST(SUM(e) AS BIGINT) AS se,
-                         CAST(SUM(d * d) AS BIGINT) AS sdd,
-                         CAST(SUM(e * e) AS BIGINT) AS see,
-                         CAST(SUM(d * e) AS BIGINT) AS sde
-                  FROM {_doc_event_cells_sql(res)})""")
-    union = " UNION ALL ".join(legs)
-    return f"SELECT * FROM ({union}) ORDER BY res"
-
-
-def q_variance_partition(spark, sf_dir):
-    """Nested spatial ANOVA: how much res-3 event-count variance lives
-    BETWEEN res-1 parent tiles vs within them — the spatial
-    variance-components twin of `design_effect` (which nests by user),
-    and the quantitative basis for choosing the tile-tree fan-out:
-    SS_between = Σ n_g(x̄_g − x̄)², F = (SSB/(k−1))/(SSW/(n−k)), share =
-    SSB/SST. Every SS from exact BIGINT sums by cross-multiplication
-    (n·n_g scaling; products through DOUBLE). One row.
-
-    Scale shape: two grid-bounded aggs (child cells → parent groups) +
-    a scalar tail."""
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    child = ev.groupBy(cell_encode_col(lat, lng, 3).alias("cell")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    grp = child.groupBy(
-        cell_parent_col("cell", 3, 1).alias("parent")
-    ).agg(
-        F.count(F.lit(1)).alias("ng"),
-        F.sum("x").alias("sg"),
-        F.sum(F.col("x") * F.col("x")).alias("sgg"),
-    )
-    tot = grp.agg(
-        F.sum("ng").alias("n"),
-        F.count(F.lit(1)).alias("k"),
-        F.sum("sg").alias("sx"),
-        F.sum("sgg").alias("sxx"),
-    )
-    # SSB = Σ sg²/ng − (Σx)²/n ; SST = Σx² − (Σx)²/n — exact ratios per
-    # group, so compute n-scaled: each term through DOUBLE single division
-    ssb = grp.select(
-        F.round(
-            (F.col("sg").cast("double") * F.col("sg") / F.col("ng")), 9
-        ).alias("t")
-    ).agg(F.sum("t").alias("sgsum"))
-    out = tot.crossJoin(F.broadcast(ssb))
-    gm2 = F.col("sx").cast("double") * F.col("sx") / F.col("n")
-    sst = F.col("sxx") - gm2
-    ssb_v = F.col("sgsum") - gm2
-    ssw = sst - ssb_v
-    fstat = (ssb_v / (F.col("k") - 1)) / (ssw / (F.col("n") - F.col("k")))
-    return out.select(
-        F.col("n").alias("n_child_cells"),
-        F.col("k").alias("n_parents"),
-        F.round(sst, 6).alias("ss_total"),
-        F.round(ssb_v, 6).alias("ss_between"),
-        F.round(ssb_v / sst, 6).alias("between_share"),
-        F.round(fstat, 6).alias("f_stat"),
-    )
-
-
-def _variance_partition_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    parent = cell_parent_sql("cell", 3, 1)
-    return f"""
-        WITH child AS (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        grp AS (
-            SELECT {parent} AS parent,
-                   CAST(COUNT(*) AS BIGINT) AS ng,
-                   CAST(SUM(x) AS BIGINT) AS sg,
-                   CAST(SUM(x * x) AS BIGINT) AS sgg
-            FROM child GROUP BY 1),
-        tot AS (
-            SELECT CAST(SUM(ng) AS BIGINT) AS n,
-                   CAST(COUNT(*) AS BIGINT) AS k,
-                   CAST(SUM(sg) AS BIGINT) AS sx,
-                   CAST(SUM(sgg) AS BIGINT) AS sxx
-            FROM grp),
-        ssb AS (
-            SELECT SUM(ROUND(CAST(sg AS DOUBLE) * sg / ng, 9)) AS sgsum
-            FROM grp)
-        SELECT n AS n_child_cells, k AS n_parents,
-               ROUND(sxx - CAST(sx AS DOUBLE) * sx / n, 6) AS ss_total,
-               ROUND(sgsum - CAST(sx AS DOUBLE) * sx / n, 6) AS ss_between,
-               ROUND((sgsum - CAST(sx AS DOUBLE) * sx / n)
-                     / (sxx - CAST(sx AS DOUBLE) * sx / n), 6)
-                   AS between_share,
-               ROUND(((sgsum - CAST(sx AS DOUBLE) * sx / n) / (k - 1))
-                     / ((sxx - sgsum) / (n - k)), 6) AS f_stat
-        FROM tot CROSS JOIN ssb
-    """
-
-
-def q_knn_regression_cells(spark, sf_dir):
-    """k-NN regression on the tile lattice: predict each occupied res-2
-    cell's DOC density from its 5 nearest occupied cells' EVENT
-    densities — the nonparametric spatial predictor beside
-    `idw_interpolation` (fixed kernel) and `gwr_cells` (parametric):
-    neighbors by exact integer d² (ties → smaller cell), ŷ = the
-    5-neighbor mean, scored by MAE and out-of-cell R². One row.
-
-    Scale shape: the cell table is grid-bounded (res fixed ⇒ O(4^res)
-    cells at ANY data size), so the cell×cell join is constant-bounded;
-    one rank window + scalar metrics."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    cells3 = _doc_event_cells(spark, sf_dir, 3).localCheckpoint(eager=True)
-    two_r3 = F.lit(2 ** 3)
-    rem3 = F.col("cell") - F.lit(3) * F.lit(RES_MULTIPLIER)
-    pts = cells3.select(
-        "cell",
-        "d",
-        "e",
-        F.floor(rem3 / two_r3).alias("cy"),
-        F.pmod(rem3, two_r3).alias("cx"),
-    )
-    a, b = pts.alias("a"), pts.alias("b")
-    pairs = a.join(b, F.col("a.cell") != F.col("b.cell")).select(
-        F.col("a.cell").alias("cell"),
-        F.col("a.d").alias("y"),
-        F.col("b.e").alias("nbr_e"),
-        F.col("b.cell").alias("nbr"),
-        (
-            (F.col("a.cx") - F.col("b.cx")) * (F.col("a.cx") - F.col("b.cx"))
-            + (F.col("a.cy") - F.col("b.cy"))
-            * (F.col("a.cy") - F.col("b.cy"))
-        ).alias("d2"),
-    )
-    w = Window.partitionBy("cell").orderBy("d2", "nbr")
-    knn = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .groupBy("cell")
-        .agg(
-            F.max("y").alias("y"),
-            (F.sum("nbr_e") / F.lit(5.0)).alias("yhat"),
-        )
-    )
-    mom = knn.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.round(F.abs(F.col("y") - F.col("yhat")), 9)).alias("sae"),
-        F.sum(
-            F.round(
-                (F.col("y") - F.col("yhat")) * (F.col("y") - F.col("yhat")),
-                9,
-            )
-        ).alias("sse"),
-    )
-    sst = F.col("syy") - F.col("sy").cast("double") * F.col("sy") / F.col("n")
-    return mom.select(
-        F.col("n").alias("n_cells"),
-        F.round(F.col("sae") / F.col("n"), 6).alias("mae"),
-        F.round(1.0 - F.col("sse") / sst, 6).alias("r2"),
-    )
-
-
-def _knn_regression_cells_sql() -> str:
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    rm = RES_MULTIPLIER
-    return f"""
-        WITH cells AS MATERIALIZED (
-            SELECT cell, d, e,
-                   CAST(FLOOR((cell - 3 * {rm}) / 8) AS BIGINT) AS cy,
-                   (cell - 3 * {rm}) % 8 AS cx
-            FROM {_doc_event_cells_sql(3)}),
-        pairs AS (
-            SELECT a.cell, a.d AS y, b.e AS nbr_e, b.cell AS nbr,
-                   (a.cx - b.cx) * (a.cx - b.cx)
-                   + (a.cy - b.cy) * (a.cy - b.cy) AS d2
-            FROM cells a JOIN cells b ON a.cell != b.cell),
-        knn AS (
-            SELECT cell, MAX(y) AS y, SUM(nbr_e) / 5.0 AS yhat
-            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY cell
-                      ORDER BY d2, nbr) AS rk
-                  FROM pairs)
-            WHERE rk <= 5 GROUP BY cell),
-        mom AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(y) AS BIGINT) AS sy,
-                   CAST(SUM(y * y) AS BIGINT) AS syy,
-                   SUM(ROUND(ABS(y - yhat), 9)) AS sae,
-                   SUM(ROUND((y - yhat) * (y - yhat), 9)) AS sse
-            FROM knn)
-        SELECT n AS n_cells,
-               ROUND(sae / n, 6) AS mae,
-               ROUND(1.0 - sse / (syy - CAST(sy AS DOUBLE) * sy / n), 6)
-                   AS r2
-        FROM mom
-    """
-
-
-def q_beta_binomial_ctr(spark, sf_dir):
-    """Empirical-Bayes beta-binomial shrinkage of per-res-2-tile
-    conversion rates — the bounded-support twin of `james_stein`
-    (Gaussian shrinkage) and the standard CTR-smoothing recipe:
-    method-of-moments α, β from the per-cell rate mean/variance (each
-    p_i one exact-count division, 9-dp), shrunk rate = (c + α)/(n + α
-    + β). Cells ranked by shrunk rate (desc, cell): small noisy cells
-    collapse toward the prior while high-volume cells keep their raw
-    rate. Top-10 with raw beside shrunk.
-
-    Scale shape: one grid-bounded agg + broadcast scalar prior."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    per = ev.groupBy(cell_encode_col(lat, lng, 2).alias("cell")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("event_type") == "purchase").cast("long")).alias("c"),
-    )
-    rates = per.select(
-        "cell",
-        "n",
-        "c",
-        F.round(F.col("c") / F.col("n").cast("double"), 9).alias("p"),
-    )
-    mom = rates.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.round(F.avg("p"), 9).alias("m1"),
-        F.round(F.avg(F.col("p") * F.col("p")), 9).alias("m2"),
-    )
-    v = F.col("m2") - F.col("m1") * F.col("m1")
-    common = F.col("m1") * (1.0 - F.col("m1")) / v - 1.0
-    prior = mom.select(
-        F.round(F.col("m1") * common, 9).alias("alpha"),
-        F.round((1.0 - F.col("m1")) * common, 9).alias("beta"),
-    )
-    return (
-        rates.crossJoin(F.broadcast(prior))
-        .select(
-            "cell",
-            "n",
-            "c",
-            F.round("p", 6).alias("raw_rate"),
-            F.round(
-                (F.col("c") + F.col("alpha"))
-                / (F.col("n") + F.col("alpha") + F.col("beta")),
-                6,
-            ).alias("shrunk_rate"),
-            F.round("alpha", 6).alias("alpha"),
-            F.round("beta", 6).alias("beta"),
-        )
-        .orderBy(F.desc("shrunk_rate"), "cell")
-        .limit(10)
-    )
-
-
-def _beta_binomial_ctr_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    return f"""
-        WITH per AS (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN event_type = 'purchase'
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS c
-            FROM events GROUP BY 1),
-        rates AS (
-            SELECT cell, n, c, ROUND(c / CAST(n AS DOUBLE), 9) AS p
-            FROM per),
-        mom AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                   ROUND(AVG(p), 9) AS m1,
-                   ROUND(AVG(p * p), 9) AS m2
-            FROM rates),
-        prior AS (
-            SELECT ROUND(m1 * (m1 * (1.0 - m1) / (m2 - m1 * m1) - 1.0), 9)
-                       AS alpha,
-                   ROUND((1.0 - m1)
-                         * (m1 * (1.0 - m1) / (m2 - m1 * m1) - 1.0), 9)
-                       AS beta
-            FROM mom)
-        SELECT cell, n, c,
-               ROUND(p, 6) AS raw_rate,
-               ROUND((c + alpha) / (n + alpha + beta), 6) AS shrunk_rate,
-               ROUND(alpha, 6) AS alpha,
-               ROUND(beta, 6) AS beta
-        FROM rates CROSS JOIN prior
-        ORDER BY shrunk_rate DESC, cell LIMIT 10
-    """
-
-
-# ---------------------------------------------------------------------------
-# stylometry, diversity partition, lexical richness, landscape contagion
-# (session 14)
-# ---------------------------------------------------------------------------
-
-_DELTA_TOPW = 12
-
-
-def q_burrows_delta(spark, sf_dir):
-    """Burrows' Delta stylometric distance between the 5 sources — the
-    classic authorship-attribution measure over the corpus's most
-    frequent (function-word proxy) tokens: per-source relative
-    frequencies of the global top-12 tokens (ties → token asc),
-    z-scored across sources (sample σ), Δ(s₁,s₂) = mean |z₁ − z₂|.
-    The STYLE lens beside `domain_shift_ppl` (content LM) and
-    `jsd_sources` (distributional): Delta deliberately looks only at
-    high-frequency words, where authorial habit lives. All 10 source
-    pairs, Δ 6-dp, ordered.
-
-    Scale shape: one token agg + broadcast top-12 + O(sources × 12)
-    z-table; the pair join is 5×5."""
-    toks = (
-        _read(spark, sf_dir, "documents")
-        .select("source", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.length("tok") >= 1)
-    )
-    top = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "tok")
-        .limit(_DELTA_TOPW)
-        .select("tok")
-    )
-    per_src = toks.groupBy("source").agg(F.count(F.lit(1)).alias("nt"))
-    cnt = (
-        toks.join(F.broadcast(top), "tok")
-        .groupBy("source", "tok")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .join(per_src, "source")
-        .select(
-            "source",
-            "tok",
-            F.round(F.col("c") / F.col("nt").cast("double"), 9).alias("f"),
-        )
-    )
-    # dense (source × top-token) grid so absent words count as f = 0
-    grid = (
-        per_src.select("source")
-        .crossJoin(F.broadcast(top))
-        .join(cnt, ["source", "tok"], "left")
-        .select(
-            "source", "tok", F.coalesce("f", F.lit(0.0)).alias("f")
-        )
-    )
-    stats = grid.groupBy("tok").agg(
-        F.count(F.lit(1)).alias("k"),
-        F.round(F.avg("f"), 9).alias("mu"),
-        F.round(
-            F.sqrt(
-                (
-                    F.sum(F.col("f") * F.col("f"))
-                    - F.sum("f") * F.sum("f") / F.count(F.lit(1))
-                )
-                / (F.count(F.lit(1)) - 1)
-            ),
-            9,
-        ).alias("sd"),
-    )
-    z = grid.join(F.broadcast(stats), "tok").select(
-        "source",
-        "tok",
-        F.round((F.col("f") - F.col("mu")) / F.col("sd"), 9).alias("z"),
-    )
-    pairs = (
-        z.alias("a")
-        .join(z.alias("b"), "tok")
-        .filter(F.col("a.source") < F.col("b.source"))
-        .groupBy(
-            F.col("a.source").alias("s1"), F.col("b.source").alias("s2")
-        )
-        .agg(
-            F.round(
-                F.avg(F.round(F.abs(F.col("a.z") - F.col("b.z")), 9)), 6
-            ).alias("delta")
-        )
-    )
-    return pairs.orderBy("s1", "s2")
-
-
-def _burrows_delta_sql() -> str:
-    return f"""
-        WITH toks AS MATERIALIZED (
-            SELECT source, tok
-            FROM (SELECT source,
-                         UNNEST(string_split(text, ' ')) AS tok
-                  FROM documents)
-            WHERE length(tok) >= 1),
-        top AS (
-            SELECT tok FROM toks GROUP BY tok
-            ORDER BY COUNT(*) DESC, tok LIMIT {_DELTA_TOPW}),
-        per_src AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS nt
-                    FROM toks GROUP BY source),
-        cnt AS (
-            SELECT t.source, t.tok,
-                   ROUND(COUNT(*) / CAST(ANY_VALUE(nt) AS DOUBLE), 9) AS f
-            FROM toks t JOIN top USING (tok)
-            JOIN per_src p ON t.source = p.source
-            GROUP BY t.source, t.tok),
-        grid AS (
-            SELECT s.source, top.tok, COALESCE(cnt.f, 0.0) AS f
-            FROM (SELECT source FROM per_src) s
-            CROSS JOIN top
-            LEFT JOIN cnt ON cnt.source = s.source AND cnt.tok = top.tok),
-        stats AS (
-            SELECT tok,
-                   ROUND(AVG(f), 9) AS mu,
-                   ROUND(SQRT((SUM(f * f) - SUM(f) * SUM(f) / COUNT(*))
-                              / (COUNT(*) - 1)), 9) AS sd
-            FROM grid GROUP BY tok),
-        z AS (
-            SELECT source, grid.tok, ROUND((f - mu) / sd, 9) AS z
-            FROM grid JOIN stats ON grid.tok = stats.tok)
-        SELECT a.source AS s1, b.source AS s2,
-               ROUND(AVG(ROUND(ABS(a.z - b.z), 9)), 6) AS delta
-        FROM z a JOIN z b ON a.tok = b.tok AND a.source < b.source
-        GROUP BY 1, 2
-        ORDER BY s1, s2
-    """
-
-
-def q_beta_diversity(spark, sf_dir):
-    """Whittaker beta diversity of the corpus vocabulary across res-1
-    tiles — the γ/ᾱ decomposition that says whether the corpus's
-    lexical variety lives WITHIN tiles or BETWEEN them (the scale
-    anatomy of richness, beside `hill_diversity`'s per-cell profile
-    and `heaps_law`'s growth curve): γ = corpus distinct types, ᾱ =
-    mean per-tile distinct types, β_W = γ/ᾱ (multiplicative), β_A =
-    γ − ᾱ (additive). Exact distinct counts; two float tails.
-
-    Scale shape: two distinct aggs (one per (tile, token), one
-    global) — the (tile, token) stream is the `doc_tfidf_terms`
-    dataflow re-keyed by tile."""
-    d = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    toks = d.select(
-        cell_encode_col(lat, lng, 1).alias("cell"),
-        F.explode(F.split("text", " ")).alias("tok"),
-    ).filter(F.length("tok") >= 1)
-    per_tile = (
-        toks.groupBy("cell")
-        .agg(F.countDistinct("tok").alias("s"))
-    )
-    gamma = toks.agg(F.countDistinct("tok").alias("g"))
-    alpha = per_tile.agg(
-        F.count(F.lit(1)).alias("n_tiles"),
-        F.sum("s").alias("ssum"),
-    )
-    return (
-        alpha.crossJoin(F.broadcast(gamma))
-        .select(
-            "n_tiles",
-            F.col("g").alias("gamma_types"),
-            F.round(F.col("ssum") / F.col("n_tiles").cast("double"), 6).alias(
-                "alpha_mean"
-            ),
-            F.round(
-                F.col("g")
-                / (F.col("ssum") / F.col("n_tiles").cast("double")),
-                6,
-            ).alias("beta_whittaker"),
-            F.round(
-                F.col("g")
-                - F.col("ssum") / F.col("n_tiles").cast("double"),
-                6,
-            ).alias("beta_additive"),
-        )
-    )
-
-
-def _beta_diversity_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 1)
-    return f"""
-        WITH toks AS MATERIALIZED (
-            SELECT {cell} AS cell, tok
-            FROM (SELECT doc_id,
-                         UNNEST(string_split(text, ' ')) AS tok
-                  FROM documents)
-            WHERE length(tok) >= 1),
-        per_tile AS (
-            SELECT cell, CAST(COUNT(DISTINCT tok) AS BIGINT) AS s
-            FROM toks GROUP BY cell),
-        gamma AS (SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS g
-                  FROM toks),
-        alpha AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_tiles,
-                         CAST(SUM(s) AS BIGINT) AS ssum
-                  FROM per_tile)
-        SELECT n_tiles, g AS gamma_types,
-               ROUND(ssum / CAST(n_tiles AS DOUBLE), 6) AS alpha_mean,
-               ROUND(g / (ssum / CAST(n_tiles AS DOUBLE)), 6)
-                   AS beta_whittaker,
-               ROUND(g - ssum / CAST(n_tiles AS DOUBLE), 6)
-                   AS beta_additive
-        FROM alpha CROSS JOIN gamma
-    """
-
-
-def q_yule_k(spark, sf_dir):
-    """Yule's characteristic K per source — the size-invariant lexical
-    repetitiveness constant (K = 10⁴·(Σ m²V_m − N)/N² over the
-    frequency spectrum V_m): high K = a few types dominate (templated
-    text), low K = rich vocabulary; unlike TTR it does not drift with
-    corpus size, so sources of different volume compare fairly
-    (`heaps_law` fits growth; K summarizes the spectrum in one
-    number). Spectrum counts exact BIGINTs; one float tail. Per
-    source, ordered by K desc.
-
-    Scale shape: (source, token) agg → (source, m) spectrum agg —
-    two shuffles on aggregated streams."""
-    toks = (
-        _read(spark, sf_dir, "documents")
-        .select("source", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.length("tok") >= 1)
-    )
-    freq = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("m"))
-    spec = freq.groupBy("source", "m").agg(F.count(F.lit(1)).alias("vm"))
-    agg = spec.groupBy("source").agg(
-        F.sum(F.col("m") * F.col("vm")).alias("n"),
-        F.sum(F.col("m") * F.col("m") * F.col("vm")).alias("smm"),
-        F.sum("vm").alias("v_types"),
-    )
-    return (
-        agg.select(
-            "source",
-            F.col("n").alias("n_tokens"),
-            "v_types",
-            F.round(
-                1e4
-                * (F.col("smm") - F.col("n")).cast("double")
-                / (F.col("n").cast("double") * F.col("n")),
-                6,
-            ).alias("yule_k"),
-        )
-        .orderBy(F.desc("yule_k"), "source")
-    )
-
-
-def _yule_k_sql() -> str:
-    return """
-        WITH toks AS (
-            SELECT source, tok
-            FROM (SELECT source,
-                         UNNEST(string_split(text, ' ')) AS tok
-                  FROM documents)
-            WHERE length(tok) >= 1),
-        freq AS (SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS m
-                 FROM toks GROUP BY 1, 2),
-        spec AS (SELECT source, m, CAST(COUNT(*) AS BIGINT) AS vm
-                 FROM freq GROUP BY 1, 2),
-        agg AS (
-            SELECT source,
-                   CAST(SUM(m * vm) AS BIGINT) AS n,
-                   CAST(SUM(m * m * vm) AS BIGINT) AS smm,
-                   CAST(SUM(vm) AS BIGINT) AS v_types
-            FROM spec GROUP BY source)
-        SELECT source, n AS n_tokens, v_types,
-               ROUND(1e4 * CAST(smm - n AS DOUBLE)
-                     / (CAST(n AS DOUBLE) * n), 6) AS yule_k
-        FROM agg
-        ORDER BY yule_k DESC, source
-    """
-
-
-def q_contagion_index(spark, sf_dir):
-    """Landscape contagion index of the doc-density surface: occupied
-    res-3 cells classed into deterministic terciles (rank by (count,
-    cell) → class = 1 + ⌊3(r−1)/n⌋), directed adjacency pairs over the
-    queen ring, C = 1 + Σ q ln q / (2 ln m) on the exact pair counts —
-    the aggregation/interspersion scalar of landscape ecology (C → 1 =
-    one clumped class, → 0 = maximally interspersed) beside
-    `join_counts` (two-class) and `focal_mode` (local). One row + the
-    3×3 class-pair distribution pinned as columns.
-
-    Scale shape: grid-bounded rank window + the 8× ring join on
-    O(cells)."""
-    from pyspark.sql import Window
-
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    cnt = d.groupBy(cell_encode_col(lat, lng, 3).alias("cell")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    n_tot = cnt.agg(F.count(F.lit(1)).alias("n"))
-    w = Window.orderBy("x", "cell")
-    classed = (
-        cnt.withColumn("r", F.row_number().over(w))
-        .crossJoin(F.broadcast(n_tot))
-        .select(
-            "cell",
-            (
-                1
-                + F.floor(
-                    F.lit(3) * (F.col("r") - 1) / F.col("n")
-                )
-            ).alias("cls"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    ring = [(dx, dy) for dx, dy in _offsets(1) if (dx, dy) != (0, 0)]
-    nbrs = F.filter(
-        F.array(
-            *[kring_neighbor_col("cell", 3, dx, dy) for dx, dy in ring]
-        ),
-        lambda c: c.isNotNull(),
-    )
-    pairs = (
-        classed.select("cell", "cls", F.explode(nbrs).alias("nbr"))
-        .join(
-            classed.select(
-                F.col("cell").alias("nbr"), F.col("cls").alias("nbr_cls")
-            ),
-            "nbr",
-        )
-        .groupBy("cls", "nbr_cls")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    tot = pairs.agg(F.sum("c").alias("t"))
-    ent = (
-        pairs.crossJoin(F.broadcast(tot))
-        .agg(
-            F.round(
-                F.sum(
-                    F.round(
-                        F.col("c")
-                        / F.col("t").cast("double")
-                        * F.log(F.col("c") / F.col("t").cast("double")),
-                        9,
-                    )
-                ),
-                9,
-            ).alias("sumplnp"),
-            F.max("t").alias("n_pairs"),
-        )
-    )
-    return ent.select(
-        "n_pairs",
-        F.round(
-            1.0 + F.col("sumplnp") / (2.0 * F.log(F.lit(3.0))), 6
-        ).alias("contagion"),
-    )
-
-
-def _contagion_index_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    ring = [(dx, dy) for dx, dy in _offsets(1) if (dx, dy) != (0, 0)]
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in ring)
-    nbr = kring_neighbor_sql("c.cell", 3, "o.dx", "o.dy")
-    return f"""
-        WITH cnt AS (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS x
-            FROM documents GROUP BY 1),
-        nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM cnt),
-        classed AS MATERIALIZED (
-            SELECT cell,
-                   1 + CAST(FLOOR(3 * (r - 1) / CAST(n AS DOUBLE))
-                       AS BIGINT) AS cls
-            FROM (SELECT cell,
-                         ROW_NUMBER() OVER (ORDER BY x, cell) AS r
-                  FROM cnt)
-            CROSS JOIN nt),
-        adj AS (
-            SELECT c.cls, c2.cls AS nbr_cls, CAST(COUNT(*) AS BIGINT) AS c
-            FROM (SELECT c.cell, c.cls, {nbr} AS nbr
-                  FROM classed c
-                  CROSS JOIN (VALUES {offs}) o(dx, dy)
-                  WHERE {nbr} IS NOT NULL) c
-            JOIN classed c2 ON c.nbr = c2.cell
-            GROUP BY 1, 2),
-        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS t FROM adj),
-        ent AS (
-            SELECT ROUND(SUM(ROUND(c / CAST(t AS DOUBLE)
-                              * LN(c / CAST(t AS DOUBLE)), 9)), 9)
-                       AS sumplnp,
-                   MAX(t) AS n_pairs
-            FROM adj CROSS JOIN tot)
-        SELECT n_pairs,
-               ROUND(1.0 + sumplnp / (2.0 * LN(3.0)), 6) AS contagion
-        FROM ent
-    """
-
-
-# ---------------------------------------------------------------------------
-# raster morphology + cartographic classing (session 14)
-# ---------------------------------------------------------------------------
-
-# Yokoi ring order: E, NE, N, NW, W, SW, S, SE (x1..x8, counter-clockwise)
-_YOKOI_RING = (
-    (1, 0), (1, 1), (0, 1), (-1, 1), (-1, 0), (-1, -1), (0, -1), (1, -1)
-)
-
-
-def q_yokoi_connectivity(spark, sf_dir):
-    """Yokoi connectivity number over the occupied-res-3 doc mask — the
-    raster-skeleton morphology classifier (isolated / edge / connecting
-    / branching / crossing cells) behind thinning algorithms, beside
-    `ruggedness_index` (magnitude) and `contagion_index` (global): the
-    EXACT integer formula N₄ = Σ_{k∈{1,3,5,7}} (x_k − x_k·x_{k+1}·
-    x_{k+2}) over the 8-ring occupancy bits (x₉ = x₁). Output: cell
-    count per connectivity class.
-
-    Scale shape: ONE exploded ring join + a max-pivot back to 8 bits +
-    the closed-form projection — grid-bounded."""
-    from raptor_service_spark.operators.neighborhood import (
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = (
-        d.groupBy(cell_encode_col(lat, lng, 3).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("x"))
-        .select("cell")
-        .localCheckpoint(eager=True)
-    )
-    nbrs = F.array(
-        *[
-            F.struct(
-                F.lit(k + 1).alias("k"),
-                kring_neighbor_col("cell", 3, dx, dy).alias("nbr"),
-            )
-            for k, (dx, dy) in enumerate(_YOKOI_RING)
-        ]
-    )
-    exploded = occ.select("cell", F.explode(nbrs).alias("e")).select(
-        "cell", F.col("e.k").alias("k"), F.col("e.nbr").alias("nbr")
-    )
-    hit = exploded.join(
-        occ.select(F.col("cell").alias("nbr")), "nbr"
-    ).select("cell", "k")
-    bits = hit.groupBy("cell").pivot(
-        "k", list(range(1, 9))
-    ).agg(F.max(F.lit(1)))
-    x = {
-        k: F.coalesce(F.col(str(k)), F.lit(0)) for k in range(1, 9)
-    }
-    x[9], x[10] = x[1], x[2]
-    nc = sum(
-        x[k] - x[k] * x[k + 1] * x[k + 2] for k in (1, 3, 5, 7)
-    )
-    classed = occ.join(bits, "cell", "left").select(
-        "cell",
-        F.coalesce(
-            nc, F.lit(0)
-        ).alias("nc"),
-    )
-    return (
-        classed.groupBy("nc")
-        .agg(F.count(F.lit(1)).alias("n_cells"))
-        .orderBy("nc")
-    )
-
-
-def _yokoi_connectivity_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    offs = ", ".join(
-        f"({k + 1}, {dx}, {dy})" for k, (dx, dy) in enumerate(_YOKOI_RING)
-    )
-    nbr = kring_neighbor_sql("c.cell", 3, "o.dx", "o.dy")
-    xs = {
-        k: f"COALESCE(MAX(CASE WHEN k = {k} THEN 1 END), 0)"
-        for k in range(1, 9)
-    }
-    xs[9], xs[10] = xs[1], xs[2]
-    nc = " + ".join(
-        f"({xs[k]} - {xs[k]} * {xs[k + 1]} * {xs[k + 2]})"
-        for k in (1, 3, 5, 7)
-    )
-    return f"""
-        WITH occ AS MATERIALIZED (
-            SELECT {cell} AS cell FROM documents GROUP BY 1),
-        hit AS (
-            SELECT c.cell, c.k
-            FROM (SELECT c.cell, o.k, {nbr} AS nbr
-                  FROM occ c CROSS JOIN (VALUES {offs}) o(k, dx, dy)
-                  WHERE {nbr} IS NOT NULL) c
-            JOIN occ n ON c.nbr = n.cell),
-        nc AS (
-            SELECT occ.cell,
-                   COALESCE(b.nc, 0) AS nc
-            FROM occ LEFT JOIN (
-                SELECT cell, {nc} AS nc FROM hit GROUP BY cell) b
-            USING (cell))
-        SELECT nc, CAST(COUNT(*) AS BIGINT) AS n_cells
-        FROM nc GROUP BY nc ORDER BY nc
-    """
-
-
-def q_binary_morphology(spark, sf_dir):
-    """Binary morphological OPENING (erode → dilate, 3×3 structuring
-    element) of the occupied-res-3 doc mask — the despeckle operation
-    of raster map algebra (thin protrusions and isolated cells vanish,
-    bulk survives): erosion keeps cells whose FULL 8-ring is occupied,
-    dilation grows the eroded core back by one ring. Counts are exact;
-    removed = mask − opening (opening ⊆ mask by construction).
-
-    Scale shape: two ring joins on O(occupied cells) — grid-bounded."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    occ = (
-        d.groupBy(cell_encode_col(lat, lng, 3).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("x"))
-        .select("cell")
-        .localCheckpoint(eager=True)
-    )
-    ring = [(dx, dy) for dx, dy in _offsets(1) if (dx, dy) != (0, 0)]
-    ring_arr = F.array(
-        *[kring_neighbor_col("cell", 3, dx, dy) for dx, dy in ring]
-    )
-    cand = occ.select(
-        "cell",
-        F.explode(F.filter(ring_arr, lambda c: c.isNotNull())).alias("nbr"),
-    )
-    # 8 OCCUPIED neighbors implies the full 8-ring exists (occupied is a
-    # subset of existing), so one count suffices; border cells can't erode
-    eroded = (
-        cand.join(occ.select(F.col("cell").alias("nbr")), "nbr")
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_occ"))
-        .filter(F.col("n_occ") == 8)
-        .select("cell")
-        .localCheckpoint(eager=True)
-    )
-    grown = eroded.select(
-        F.explode(
-            F.array_union(
-                F.filter(ring_arr, lambda c: c.isNotNull()),
-                F.array("cell"),
-            )
-        ).alias("cell")
-    ).distinct()
-    opened = grown.join(occ, "cell").select("cell")
-    out = (
-        occ.agg(F.count(F.lit(1)).alias("n_mask"))
-        .crossJoin(eroded.agg(F.count(F.lit(1)).alias("n_eroded")))
-        .crossJoin(opened.agg(F.count(F.lit(1)).alias("n_opened")))
-    )
-    return out.select(
-        "n_mask",
-        "n_eroded",
-        "n_opened",
-        (F.col("n_mask") - F.col("n_opened")).alias("n_removed"),
-    )
-
-
-def _binary_morphology_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    ring = [(dx, dy) for dx, dy in _offsets(1) if (dx, dy) != (0, 0)]
-    offs = ", ".join(f"({dx}, {dy})" for dx, dy in ring)
-    nbr = kring_neighbor_sql("c.cell", 3, "o.dx", "o.dy")
-    nbr_e = kring_neighbor_sql("e.cell", 3, "o.dx", "o.dy")
-    return f"""
-        WITH occ AS MATERIALIZED (
-            SELECT {cell} AS cell FROM documents GROUP BY 1),
-        ringed AS (
-            SELECT c.cell, {nbr} AS nbr
-            FROM occ c CROSS JOIN (VALUES {offs}) o(dx, dy)
-            WHERE {nbr} IS NOT NULL),
-        eroded AS MATERIALIZED (
-            -- 8 occupied neighbors implies the full ring exists
-            SELECT r.cell
-            FROM ringed r JOIN occ n ON r.nbr = n.cell
-            GROUP BY r.cell
-            HAVING COUNT(*) = 8),
-        grown AS (
-            SELECT DISTINCT cell FROM (
-                SELECT {nbr_e} AS cell
-                FROM eroded e CROSS JOIN (VALUES {offs}) o(dx, dy)
-                WHERE {nbr_e} IS NOT NULL
-                UNION ALL SELECT cell FROM eroded)),
-        opened AS (SELECT g.cell FROM grown g JOIN occ USING (cell))
-        SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM occ) AS n_mask,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM eroded) AS n_eroded,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM opened) AS n_opened,
-               (SELECT CAST(COUNT(*) AS BIGINT) FROM occ)
-               - (SELECT CAST(COUNT(*) AS BIGINT) FROM opened)
-                   AS n_removed
-    """
-
-
-_LACUNARITY_RESOLUTIONS = (4, 3, 2, 1)
-
-
-def q_lacunarity(spark, sf_dir):
-    """Lacunarity ladder Λ(r) of the doc-density surface at res 4→1 —
-    the gappiness spectrum that separates surfaces with EQUAL fractal
-    dimension (`box_counting_dim`) by their hole structure: Λ =
-    n·ΣM²/(ΣM)² over ALL 4^res fixed boxes (empty boxes contribute 0
-    to the sums, so the dense grid is never materialized — n is the
-    closed-form 4^res). Exact BIGINT sums, one float tail per row.
-
-    Scale shape: one res-4 agg, then parent-rollup aggs (the tile-
-    pyramid dataflow); constant output."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    base = d.groupBy(cell_encode_col(lat, lng, 4).alias("cell")).agg(
-        F.count(F.lit(1)).alias("m")
-    ).localCheckpoint(eager=True)
-    legs = []
-    cur = base
-    for res in _LACUNARITY_RESOLUTIONS:
-        if res != 4:
-            cur = cur.groupBy(
-                cell_parent_col("cell", res + 1, res).alias("cell")
-            ).agg(F.sum("m").alias("m"))
-        n_boxes = 4 ** res
-        legs.append(
-            cur.agg(
-                F.sum("m").alias("sm"),
-                F.sum(F.col("m") * F.col("m")).alias("smm"),
-            ).select(
-                F.lit(res).alias("res"),
-                F.lit(n_boxes).cast("long").alias("n_boxes"),
-                F.round(
-                    F.lit(float(n_boxes))
-                    * F.col("smm")
-                    / (F.col("sm").cast("double") * F.col("sm")),
-                    6,
-                ).alias("lacunarity"),
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionAll(leg)
-    return out.orderBy(F.desc("res"))
-
-
-def _lacunarity_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 4)
-    ctes = [
-        f"b4 AS (SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS m"
-        " FROM documents GROUP BY 1)"
-    ]
-    for res in (3, 2, 1):
-        parent = cell_parent_sql("cell", res + 1, res)
-        ctes.append(
-            f"b{res} AS (SELECT {parent} AS cell,"
-            f" CAST(SUM(m) AS BIGINT) AS m FROM b{res + 1} GROUP BY 1)"
-        )
-    legs = []
-    for res in _LACUNARITY_RESOLUTIONS:
-        n_boxes = 4 ** res
-        legs.append(
-            f"""SELECT {res} AS res,
-                   CAST({n_boxes} AS BIGINT) AS n_boxes,
-                   ROUND({float(n_boxes)!r} * SUM(m * m)
-                         / (CAST(SUM(m) AS DOUBLE) * SUM(m)), 6)
-                       AS lacunarity
-            FROM b{res}"""
-        )
-    union = " UNION ALL ".join(legs)
-    return (
-        "WITH " + ",\n        ".join(ctes)
-        + f"\n        SELECT * FROM ({union}) ORDER BY res DESC"
-    )
-
-
-_JENKS_K = 4
-
-
-def q_jenks_breaks(spark, sf_dir):
-    """Jenks natural-breaks classification (k = 4) of occupied res-5
-    doc-cell counts — THE choropleth classing algorithm of
-    cartography, here as the exact O(n²k) Fisher DP over the sorted
-    value vector: F_k(i) = min_j F_{k−1}(j) + SSE(j+1..i), SSE from
-    exact BIGINT prefix sums (one division, 9-dp before every min so
-    the argmin is knife-edge-free; ties → smaller j). Output: the 3
-    break values + the goodness-of-variance fit 1 − F_k(n)/SSE(1..n).
-
-    Scale shape: cells are grid-bounded, the DP table is O(n²) on the
-    AGGREGATED cell list — constant in data size; each DP level is one
-    join + one rank window."""
-    from pyspark.sql import Window
-
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    cnt = d.groupBy(cell_encode_col(lat, lng, 5).alias("cell")).agg(
-        F.count(F.lit(1)).alias("v")
-    )
-    wv = Window.orderBy("v", "cell")
-    wcum = wv.rowsBetween(Window.unboundedPreceding, 0)
-    vals = cnt.select(
-        F.row_number().over(wv).alias("i"),
-        "v",
-        F.sum("v").over(wcum).alias("s"),
-        F.sum(F.col("v") * F.col("v")).over(wcum).alias("q"),
-    ).localCheckpoint(eager=True)
-    # SSE(j+1..i) from prefix rows j (j = 0 → virtual zero row)
-    zero = vals.sparkSession.createDataFrame(
-        [(0, 0, 0, 0)], "i long, v long, s long, q long"
-    )
-    pre = vals.select(
-        F.col("i").alias("j"), F.col("s").alias("sj"), F.col("q").alias("qj")
-    ).unionAll(
-        zero.select(
-            F.col("i").alias("j"),
-            F.col("s").alias("sj"),
-            F.col("q").alias("qj"),
-        )
-    )
-
-    def sse(i_s, i_q, j_sj, j_qj, i_i, j_j):
-        seg = (i_s - j_sj).cast("double")
-        return F.round(
-            (i_q - j_qj) - seg * seg / (i_i - j_j).cast("double"), 9
-        )
-
-    # F_1(i) = SSE(1..i)
-    f_prev = vals.select(
-        "i",
-        sse(
-            F.col("s"), F.col("q"), F.lit(0), F.lit(0), F.col("i"), F.lit(0)
-        ).alias("cost"),
-        F.lit(0).alias("argj"),
-    )
-    tracks = {1: f_prev}
-    for k in range(2, _JENKS_K + 1):
-        cand = (
-            f_prev.select(
-                F.col("i").alias("j"),
-                F.col("cost").alias("cprev"),
-            )
-            .join(
-                pre.filter(F.col("j") > 0), "j"
-            )
-            .join(
-                vals.select("i", "s", "q"),
-                F.col("i") > F.col("j"),
-            )
-            .filter(F.col("j") >= k - 1)
-            .select(
-                "i",
-                "j",
-                F.round(
-                    F.col("cprev")
-                    + sse(
-                        F.col("s"),
-                        F.col("q"),
-                        F.col("sj"),
-                        F.col("qj"),
-                        F.col("i"),
-                        F.col("j"),
-                    ),
-                    9,
-                ).alias("cost"),
-            )
-        )
-        wk = Window.partitionBy("i").orderBy("cost", "j")
-        f_prev = (
-            cand.withColumn("rn", F.row_number().over(wk))
-            .filter(F.col("rn") == 1)
-            .select("i", "cost", F.col("j").alias("argj"))
-        )
-        tracks[k] = f_prev.localCheckpoint(eager=True)
-    n_row = vals.agg(F.max("i").alias("n"))
-    # backtrack k=4 → break positions j3 > j2 > j1
-    b3 = tracks[4].join(
-        n_row, tracks[4]["i"] == n_row["n"]
-    ).select(F.col("argj").alias("j3"), "n")
-    b2 = b3.join(tracks[3], tracks[3]["i"] == b3["j3"]).select(
-        "n", "j3", F.col("argj").alias("j2")
-    )
-    b1 = b2.join(tracks[2], tracks[2]["i"] == b2["j2"]).select(
-        "n", "j3", "j2", F.col("argj").alias("j1")
-    )
-    tot = tracks[4].join(n_row, tracks[4]["i"] == n_row["n"]).select(
-        F.col("cost").alias("fk")
-    )
-    sse_all = vals.crossJoin(n_row).filter(F.col("i") == F.col("n")).select(
-        sse(
-            F.col("s"), F.col("q"), F.lit(0), F.lit(0), F.col("i"), F.lit(0)
-        ).alias("sst")
-    )
-    bv = (
-        b1.join(vals.select(F.col("i").alias("j1"), F.col("v").alias("brk1")), "j1")
-        .join(vals.select(F.col("i").alias("j2"), F.col("v").alias("brk2")), "j2")
-        .join(vals.select(F.col("i").alias("j3"), F.col("v").alias("brk3")), "j3")
-    )
-    return (
-        bv.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(sse_all))
-        .select(
-            F.col("n").alias("n_cells"),
-            "brk1",
-            "brk2",
-            "brk3",
-            F.round(1.0 - F.col("fk") / F.col("sst"), 6).alias("gvf"),
-        )
-    )
-
-
-def _jenks_breaks_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    cell = cell_encode_sql(lat, lng, 5)
-    sse = (
-        "ROUND((q - {qj}) - CAST(s - {sj} AS DOUBLE) * (s - {sj})"
-        " / (i - {j}), 9)"
-    )
-    ctes = [
-        f"""cnt AS (SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS v
-            FROM documents GROUP BY 1)""",
-        """vals AS MATERIALIZED (
-            SELECT ROW_NUMBER() OVER (ORDER BY v, cell) AS i, v,
-                   SUM(v) OVER (ORDER BY v, cell
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS s,
-                   SUM(v * v) OVER (ORDER BY v, cell
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS q
-            FROM cnt)""",
-        f"""f1 AS (SELECT i,
-                {sse.format(qj='0', sj='0', j='0')} AS cost,
-                0 AS argj
-            FROM vals)""",
-    ]
-    for k in range(2, _JENKS_K + 1):
-        ctes.append(f"""f{k} AS MATERIALIZED (
-            SELECT i, cost, argj FROM (
-                SELECT v.i, p.j,
-                       ROUND(p.cost + {sse.format(qj='p.qj', sj='p.sj',
-                                                  j='p.j')}, 9) AS cost,
-                       p.j AS argj,
-                       ROW_NUMBER() OVER (PARTITION BY v.i
-                           ORDER BY ROUND(p.cost
-                               + {sse.format(qj='p.qj', sj='p.sj',
-                                             j='p.j')}, 9), p.j) AS rn
-                FROM (SELECT f.i AS j, f.cost, vv.s AS sj, vv.q AS qj
-                      FROM f{k - 1} f JOIN vals vv ON vv.i = f.i
-                      WHERE f.i >= {k - 1}) p
-                JOIN vals v ON v.i > p.j)
-            WHERE rn = 1)""")
-    return (
-        "WITH " + ",\n        ".join(ctes)
-        + f"""
-        , nn AS (SELECT MAX(i) AS n FROM vals),
-        back AS (
-            SELECT nn.n,
-                   (SELECT argj FROM f4 WHERE i = nn.n) AS j3,
-                   (SELECT cost FROM f4 WHERE i = nn.n) AS fk
-            FROM nn),
-        back2 AS (
-            SELECT back.*, (SELECT argj FROM f3 WHERE i = back.j3) AS j2
-            FROM back),
-        back3 AS (
-            SELECT back2.*, (SELECT argj FROM f2 WHERE i = back2.j2) AS j1
-            FROM back2),
-        sst AS (
-            SELECT {sse.format(qj='0', sj='0', j='0')} AS sst
-            FROM vals CROSS JOIN nn WHERE i = n)
-        SELECT CAST(b.n AS BIGINT) AS n_cells,
-               (SELECT v FROM vals WHERE i = b.j1) AS brk1,
-               (SELECT v FROM vals WHERE i = b.j2) AS brk2,
-               (SELECT v FROM vals WHERE i = b.j3) AS brk3,
-               ROUND(1.0 - b.fk / sst.sst, 6) AS gvf
-        FROM back3 b CROSS JOIN sst
-    """
-    )
-
-
-# ---------------------------------------------------------------------------
-# circular stats, portmanteau, structural holes, marked pattern
-# (session 14)
-# ---------------------------------------------------------------------------
-
-
-def _hour_trig_rows() -> list[tuple[int, float, float]]:
-    """(hour, cos, sin) at 6 dp for θ = 2π·h/24 — pinned literals shared
-    verbatim by both engines (the hough_lines discipline)."""
-    import math
-
-    out = []
-    for h in range(24):
-        a = 2.0 * math.pi * h / 24.0
-        out.append((h, round(math.cos(a), 6), round(math.sin(a), 6)))
-    return out
-
-
-def q_von_mises_hours(spark, sf_dir):
-    """Von Mises concentration of each event type's hour-of-day phase —
-    the circadian sharpness scalar (κ → 0 = uniform around the clock,
-    large κ = a tight daily peak) beside `rayleigh_bearing` (spatial
-    angles) and `cell_seasonal`: per type, resultant C,S over PINNED
-    6-dp cos/sin literals (one 24-row broadcast join — no libm trig in
-    either engine's hot path), R̄ = √(C²+S²)/n, mean hour from atan2,
-    κ by the piecewise Fisher approximation branched on the 9-dp R̄ so
-    the branch can't knife-edge. Per type, ordered by κ desc.
-
-    Scale shape: one (type, hour) agg + a 24-row broadcast join."""
-    trig = spark.createDataFrame(
-        _hour_trig_rows(), "h int, c double, s double"
-    )
-    ev = _read(spark, sf_dir, "events").select(
-        "event_type", F.hour("ts").alias("h")
-    )
-    per = ev.groupBy("event_type", "h").agg(F.count(F.lit(1)).alias("n"))
-    agg = (
-        per.join(F.broadcast(trig), "h")
-        .groupBy("event_type")
-        .agg(
-            F.sum("n").alias("n"),
-            F.round(F.sum(F.col("n") * F.col("c")), 9).alias("cc"),
-            F.round(F.sum(F.col("n") * F.col("s")), 9).alias("ss"),
-        )
-    )
-    r = F.round(
-        F.sqrt(F.col("cc") * F.col("cc") + F.col("ss") * F.col("ss"))
-        / F.col("n"),
-        9,
-    )
-    withr = agg.select("event_type", "n", r.alias("r"),
-                       F.col("cc"), F.col("ss"))
-    kappa = (
-        F.when(
-            F.col("r") < 0.53,
-            2.0 * F.col("r")
-            + F.col("r") * F.col("r") * F.col("r")
-            + 5.0 * F.pow(F.col("r"), 5) / 6.0,
-        )
-        .when(
-            F.col("r") < 0.85,
-            -0.4 + 1.39 * F.col("r") + 0.43 / (1.0 - F.col("r")),
-        )
-        .otherwise(
-            1.0
-            / (
-                F.pow(F.col("r"), 3)
-                - 4.0 * F.col("r") * F.col("r")
-                + 3.0 * F.col("r")
-            )
-        )
-    )
-    mean_h = F.round(
-        F.pmod(
-            F.atan2(F.col("ss"), F.col("cc")) * 24.0
-            / F.lit(6.283185307179586),
-            F.lit(24.0),
-        ),
-        6,
-    )
-    return (
-        withr.select(
-            "event_type",
-            "n",
-            F.round("r", 6).alias("r_bar"),
-            mean_h.alias("mean_hour"),
-            F.round(kappa, 6).alias("kappa"),
-        )
-        .orderBy(F.desc("kappa"), "event_type")
-    )
-
-
-def _von_mises_hours_sql() -> str:
-    rows = ", ".join(
-        f"({h}, {c!r}, {s!r})" for h, c, s in _hour_trig_rows()
-    )
-    return f"""
-        WITH trig(h, c, s) AS (VALUES {rows}),
-        per AS (
-            SELECT event_type, hour(ts) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS n
-            FROM events GROUP BY 1, 2),
-        agg AS (
-            SELECT event_type, CAST(SUM(n) AS BIGINT) AS n,
-                   ROUND(SUM(n * c), 9) AS cc,
-                   ROUND(SUM(n * s), 9) AS ss
-            FROM per JOIN trig USING (h)
-            GROUP BY event_type),
-        withr AS (
-            SELECT event_type, n, cc, ss,
-                   ROUND(SQRT(cc * cc + ss * ss) / n, 9) AS r
-            FROM agg)
-        SELECT event_type, n,
-               ROUND(r, 6) AS r_bar,
-               ROUND(((ATAN2(ss, cc) * 24.0 / 6.283185307179586) % 24.0
-                      + 24.0) % 24.0, 6) AS mean_hour,
-               ROUND(CASE
-                   WHEN r < 0.53 THEN 2.0 * r + r * r * r
-                        + 5.0 * POWER(r, 5) / 6.0
-                   WHEN r < 0.85 THEN -0.4 + 1.39 * r + 0.43 / (1.0 - r)
-                   ELSE 1.0 / (POWER(r, 3) - 4.0 * r * r + 3.0 * r)
-                   END, 6) AS kappa
-        FROM withr
-        ORDER BY kappa DESC, event_type
-    """
-
-
-_LJUNG_LAGS = 6
-
-
-def q_ljung_box(spark, sf_dir):
-    """Ljung-Box portmanteau test on the dense hourly event-count
-    series — the JOINT whiteness test over the first 6 autocorrelations
-    (`hourly_acf` reports each r_k; this says whether the set is
-    collectively incompatible with white noise): Q = n(n+2)·Σ r_k²/
-    (n−k), r_k from 9-dp moment ratios over the calendar-bounded dense
-    ladder. One row (n, dof, q_stat).
-
-    Scale shape: the hourly_acf dataflow — one hour agg + 6 lag
-    self-joins on the aggregated series + a scalar tail."""
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    occ = ev.select(hour.alias("h")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    span = occ.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = (
-        span.select(F.explode(F.sequence("h0", "h1")).alias("h"))
-        .join(occ, "h", "left")
-        .select("h", F.coalesce("x", F.lit(0)).cast("double").alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    mom = dense.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.round(F.sum("x"), 9).alias("sx"),
-        F.round(F.sum(F.col("x") * F.col("x")), 9).alias("sxx"),
-    )
-    lags = spark.createDataFrame(
-        [(k,) for k in range(1, _LJUNG_LAGS + 1)], "lag long"
-    )
-    a = dense.select(F.col("h").alias("ha"), F.col("x").alias("xa"))
-    b = dense.select(F.col("h").alias("hb"), F.col("x").alias("xb"))
-    prods = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("hb") == F.col("ha") + F.col("lag"))
-        .groupBy("lag")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("npairs"),
-            F.round(F.sum(F.col("xa") * F.col("xb")), 9).alias("sxy"),
-        )
-    )
-    m = F.col("sx") / F.col("n")
-    var = F.col("sxx") / F.col("n") - m * m
-    rk = F.round((F.col("sxy") / F.col("npairs") - m * m) / var, 9)
-    terms = prods.crossJoin(F.broadcast(mom)).select(
-        "lag",
-        F.col("n"),
-        F.round(rk * rk / (F.col("n") - F.col("lag")), 9).alias("t"),
-    )
-    return terms.groupBy("n").agg(
-        F.count(F.lit(1)).alias("dof"),
-        F.round(
-            F.col("n") * (F.col("n") + 2.0) * F.sum("t"), 6
-        ).alias("q_stat"),
-    ).select(F.col("n").cast("long").alias("n"), "dof", "q_stat")
-
-
-def _ljung_box_sql() -> str:
-    lags = ", ".join(f"({k})" for k in range(1, _LJUNG_LAGS + 1))
-    return f"""
-        WITH hrs AS (
-            SELECT CAST(FLOOR(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                       AS BIGINT) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hrs),
-        dense AS MATERIALIZED (
-            SELECT g.h, CAST(COALESCE(hrs.x, 0) AS DOUBLE) AS x
-            FROM (SELECT UNNEST(range(h0, h1 + 1)) AS h FROM span) g
-            LEFT JOIN hrs USING (h)),
-        mom AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                   ROUND(SUM(x), 9) AS sx,
-                   ROUND(SUM(x * x), 9) AS sxx
-            FROM dense),
-        lags(lag) AS (VALUES {lags}),
-        prods AS (
-            SELECT lag, CAST(COUNT(*) AS DOUBLE) AS npairs,
-                   ROUND(SUM(a.x * b.x), 9) AS sxy
-            FROM dense a CROSS JOIN lags
-            JOIN dense b ON b.h = a.h + lag
-            GROUP BY lag),
-        rks AS (
-            SELECT lag, n,
-                   ROUND((sxy / npairs - (sx / n) * (sx / n))
-                         / (sxx / n - (sx / n) * (sx / n)), 9) AS rk
-            FROM prods CROSS JOIN mom),
-        terms AS (
-            SELECT lag, n, ROUND(rk * rk / (n - lag), 9) AS t
-            FROM rks)
-        SELECT CAST(n AS BIGINT) AS n,
-               CAST(COUNT(*) AS BIGINT) AS dof,
-               ROUND(n * (n + 2.0) * SUM(t), 6) AS q_stat
-        FROM terms GROUP BY n
-    """
-
-
-def q_burt_constraint(spark, sf_dir):
-    """Burt's structural-holes constraint per res-2 tile on the
-    symmetrized movement graph — the brokerage scalar the centrality
-    family (katz, harmonic, betweenness) doesn't give: c_i = Σ_j(p_ij
-    + Σ_q p_iq·p_qj)², where p is the row-normalized edge weight
-    (exact transition-count ratios, 9-dp); HIGH constraint = the
-    tile's ego network is closed (no brokerage positions). Top-15
-    (constraint desc, cell).
-
-    Scale shape: one lead window for edges, a two-hop join bounded by
-    the grid-bounded tile degree — never all-pairs."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    moves = (
-        ev.select(
-            "user_id",
-            "ts",
-            "event_id",
-            cell_encode_col(lat, lng, 2).alias("a"),
-        )
-        .withColumn("b", F.lead("a").over(w))
-        .filter(F.col("b").isNotNull() & (F.col("a") != F.col("b")))
-    )
-    und = moves.select(
-        F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-    ).groupBy("u", "v").agg(F.count(F.lit(1)).alias("w"))
-    edges = und.select("u", "v", "w").unionAll(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    )
-    deg = edges.groupBy("u").agg(F.sum("w").alias("sw"))
-    p = (
-        edges.join(deg, "u")
-        .select(
-            F.col("u").alias("i"),
-            F.col("v").alias("j"),
-            F.round(F.col("w") / F.col("sw").cast("double"), 9).alias("p"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    two_hop = (
-        p.alias("x")
-        .join(
-            p.alias("y"),
-            (F.col("x.j") == F.col("y.i"))
-            & (F.col("y.j") != F.col("x.i")),
-        )
-        .groupBy(F.col("x.i").alias("i"), F.col("y.j").alias("j"))
-        .agg(
-            F.round(
-                F.sum(F.round(F.col("x.p") * F.col("y.p"), 9)), 9
-            ).alias("ind")
-        )
-    )
-    terms = (
-        p.join(two_hop, ["i", "j"], "full_outer")
-        .select(
-            "i",
-            "j",
-            (
-                F.coalesce("p", F.lit(0.0)) + F.coalesce("ind", F.lit(0.0))
-            ).alias("t"),
-        )
-    )
-    return (
-        terms.groupBy("i")
-        .agg(
-            F.count(F.lit(1)).alias("n_alters"),
-            F.round(F.sum(F.round(F.col("t") * F.col("t"), 9)), 6).alias(
-                "constraint_score"
-            ),
-        )
-        .select(F.col("i").alias("cell"), "n_alters", "constraint_score")
-        .orderBy(F.desc("constraint_score"), "cell")
-        .limit(15)
-    )
-
-
-def _burt_constraint_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    return f"""
-        WITH pts AS (
-            SELECT user_id, ts, event_id, {cell} AS a
-            FROM events),
-        moves AS (
-            SELECT a, b FROM (
-                SELECT a, LEAD(a) OVER (PARTITION BY user_id
-                    ORDER BY ts, event_id) AS b
-                FROM pts)
-            WHERE b IS NOT NULL AND a != b),
-        und AS (
-            SELECT LEAST(a, b) AS u, GREATEST(a, b) AS v,
-                   CAST(COUNT(*) AS BIGINT) AS w
-            FROM moves GROUP BY 1, 2),
-        edges AS (
-            SELECT u, v, w FROM und
-            UNION ALL SELECT v AS u, u AS v, w FROM und),
-        deg AS (SELECT u, CAST(SUM(w) AS BIGINT) AS sw
-                FROM edges GROUP BY u),
-        p AS MATERIALIZED (
-            SELECT e.u AS i, e.v AS j,
-                   ROUND(e.w / CAST(d.sw AS DOUBLE), 9) AS p
-            FROM edges e JOIN deg d ON e.u = d.u),
-        two_hop AS (
-            SELECT x.i, y.j,
-                   ROUND(SUM(ROUND(x.p * y.p, 9)), 9) AS ind
-            FROM p x JOIN p y ON x.j = y.i AND y.j != x.i
-            GROUP BY 1, 2),
-        terms AS (
-            SELECT COALESCE(p.i, t.i) AS i,
-                   COALESCE(p.p, 0.0) + COALESCE(t.ind, 0.0) AS t
-            FROM p FULL OUTER JOIN two_hop t
-            ON p.i = t.i AND p.j = t.j)
-        SELECT i AS cell, CAST(COUNT(*) AS BIGINT) AS n_alters,
-               ROUND(SUM(ROUND(t * t, 9)), 6) AS constraint_score
-        FROM terms GROUP BY i
-        ORDER BY constraint_score DESC, cell LIMIT 15
-    """
-
-
-_MARK_CORR_RINGS = (1, 2, 3)
-
-
-def q_mark_correlation(spark, sf_dir):
-    """Mark correlation function k_mm(r) of the event-VALUE surface:
-    are nearby tiles' mean transaction values correlated beyond what
-    the point pattern alone implies? k_mm(r) = E[m_i·m_j | chebyshev
-    ring r]/m̄² over occupied res-3 cell pairs at r = 1, 2, 3 — the
-    MARKED-pattern extension of `pair_correlation` (which ignores
-    marks): k > 1 = value clustering, < 1 = value inhibition. Cell
-    marks are exact integer-cent ratios (9-dp), pairs from the
-    bounded ring join.
-
-    Scale shape: one (cell) agg + ring-offset equi-joins bounded by
-    occupied cells × ring size — grid-bounded."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "value")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cells = (
-        ev.groupBy(cell_encode_col(lat, lng, 3).alias("cell"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
-        )
-        .select(
-            "cell",
-            F.round(
-                F.col("cents") / (100.0 * F.col("n")), 9
-            ).alias("m"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    mbar = cells.agg(F.round(F.avg("m"), 9).alias("mbar"))
-    legs = []
-    for r in _MARK_CORR_RINGS:
-        ring = [
-            (dx, dy)
-            for dx, dy in _offsets(r)
-            if max(abs(dx), abs(dy)) == r
-        ]
-        nbrs = F.filter(
-            F.array(
-                *[kring_neighbor_col("cell", 3, dx, dy) for dx, dy in ring]
-            ),
-            lambda c: c.isNotNull(),
-        )
-        pairs = (
-            cells.select("cell", "m", F.explode(nbrs).alias("nbr"))
-            .join(
-                cells.select(
-                    F.col("cell").alias("nbr"), F.col("m").alias("m2")
-                ),
-                "nbr",
-            )
-        )
-        legs.append(
-            pairs.agg(
-                F.count(F.lit(1)).alias("n_pairs"),
-                F.round(
-                    F.avg(F.round(F.col("m") * F.col("m2"), 9)), 9
-                ).alias("emm"),
-            ).select(
-                F.lit(r).alias("r"), "n_pairs", "emm"
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionAll(leg)
-    return (
-        out.crossJoin(F.broadcast(mbar))
-        .select(
-            "r",
-            "n_pairs",
-            F.round(
-                F.col("emm") / (F.col("mbar") * F.col("mbar")), 6
-            ).alias("k_mm"),
-        )
-        .orderBy("r")
-    )
-
-
-def _mark_correlation_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    nbr = kring_neighbor_sql("c.cell", 3, "o.dx", "o.dy")
-    legs = []
-    for r in _MARK_CORR_RINGS:
-        ring = [
-            (dx, dy)
-            for dx, dy in _offsets(r)
-            if max(abs(dx), abs(dy)) == r
-        ]
-        offs = ", ".join(f"({dx}, {dy})" for dx, dy in ring)
-        legs.append(f"""
-            SELECT {r} AS r, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                   ROUND(AVG(ROUND(pr.m * c2.m, 9)), 9) AS emm
-            FROM (SELECT c.cell, c.m, {nbr} AS nbr
-                  FROM cells c CROSS JOIN (VALUES {offs}) o(dx, dy)
-                  WHERE {nbr} IS NOT NULL) pr
-            JOIN cells c2 ON pr.nbr = c2.cell""")
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH cells AS MATERIALIZED (
-            SELECT cell,
-                   ROUND(cents / (100.0 * n), 9) AS m
-            FROM (SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS n,
-                         CAST(SUM(CAST(ROUND(value * 100) AS BIGINT))
-                             AS BIGINT) AS cents
-                  FROM events GROUP BY 1)),
-        mbar AS (SELECT ROUND(AVG(m), 9) AS mbar FROM cells)
-        SELECT r, n_pairs,
-               ROUND(emm / (mbar * mbar), 6) AS k_mm
-        FROM ({union}) CROSS JOIN mbar
-        ORDER BY r
-    """
-
-
-# ---------------------------------------------------------------------------
-# proper scoring, forecast skill, dispersion, modern dependence
-# (session 14)
-# ---------------------------------------------------------------------------
-
-
-def q_brier_decomposition(spark, sf_dir):
-    """Murphy decomposition of the Brier score for an hour-of-day
-    purchase-probability forecast — the PROPER-scoring anatomy beside
-    `calibration_bins` (which plots) and `wilson_ctr` (which bounds):
-    train = even days-of-month, test = odd (deterministic split),
-    forecast p̂_h = train purchase share per hour (9-dp exact ratio);
-    over the 24 test hour-groups Brier = REL − RES + UNC with REL =
-    Σn_k(p̂_k−ō_k)²/N, RES = Σn_k(ō_k−ō)²/N, UNC = ō(1−ō). All counts
-    exact BIGINTs; identity verified by emitting brier both directly
-    and via the decomposition.
-
-    Scale shape: two (hour) aggs + a 24-row broadcast join."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.hour("ts").alias("h"),
-        (F.dayofmonth("ts") % 2 == 0).alias("is_train"),
-        (F.col("event_type") == "purchase").cast("long").alias("y"),
-    )
-    fc = (
-        ev.filter("is_train")
-        .groupBy("h")
-        .agg(
-            F.round(F.avg("y"), 9).alias("p_hat"),
-        )
-    )
-    test = ev.filter(~F.col("is_train")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("nk"), F.sum("y").alias("ck")
-    )
-    tot = test.agg(
-        F.sum("nk").alias("n"), F.sum("ck").alias("c")
-    )
-    j = (
-        test.join(F.broadcast(fc), "h")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "nk",
-            "n",
-            F.round(F.col("ck") / F.col("nk").cast("double"), 9).alias("ok"),
-            F.round(F.col("c") / F.col("n").cast("double"), 9).alias("obar"),
-            "p_hat",
-            "ck",
-        )
-    )
-    terms = j.select(
-        "n",
-        "obar",
-        F.round(
-            F.col("nk")
-            * (F.col("p_hat") - F.col("ok"))
-            * (F.col("p_hat") - F.col("ok")),
-            9,
-        ).alias("rel_t"),
-        F.round(
-            F.col("nk")
-            * (F.col("ok") - F.col("obar"))
-            * (F.col("ok") - F.col("obar")),
-            9,
-        ).alias("res_t"),
-        # direct Brier: Σ_k [c_k(1−p̂)² + (n_k−c_k)p̂²]
-        F.round(
-            F.col("ck") * (1.0 - F.col("p_hat")) * (1.0 - F.col("p_hat"))
-            + (F.col("nk") - F.col("ck")) * F.col("p_hat") * F.col("p_hat"),
-            9,
-        ).alias("bs_t"),
-    )
-    agg = terms.groupBy("n", "obar").agg(
-        F.sum("rel_t").alias("rel_s"),
-        F.sum("res_t").alias("res_s"),
-        F.sum("bs_t").alias("bs_s"),
-    )
-    return agg.select(
-        F.col("n").alias("n_test"),
-        F.round(F.col("bs_s") / F.col("n"), 6).alias("brier"),
-        F.round(F.col("rel_s") / F.col("n"), 6).alias("reliability"),
-        F.round(F.col("res_s") / F.col("n"), 6).alias("resolution"),
-        F.round(F.col("obar") * (1.0 - F.col("obar")), 6).alias(
-            "uncertainty"
-        ),
-    )
-
-
-def _brier_decomposition_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT hour(ts) AS h,
-                   dayofmonth(ts) % 2 = 0 AS is_train,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-            FROM events),
-        fc AS (
-            SELECT h, ROUND(AVG(y), 9) AS p_hat
-            FROM ev WHERE is_train GROUP BY h),
-        test AS (
-            SELECT h, CAST(COUNT(*) AS BIGINT) AS nk,
-                   CAST(SUM(y) AS BIGINT) AS ck
-            FROM ev WHERE NOT is_train GROUP BY h),
-        tot AS (SELECT CAST(SUM(nk) AS BIGINT) AS n,
-                       CAST(SUM(ck) AS BIGINT) AS c
-                FROM test),
-        j AS (
-            SELECT nk, n, ck, p_hat,
-                   ROUND(ck / CAST(nk AS DOUBLE), 9) AS ok,
-                   ROUND(c / CAST(n AS DOUBLE), 9) AS obar
-            FROM test JOIN fc USING (h) CROSS JOIN tot),
-        terms AS (
-            SELECT n, obar,
-                   ROUND(nk * (p_hat - ok) * (p_hat - ok), 9) AS rel_t,
-                   ROUND(nk * (ok - obar) * (ok - obar), 9) AS res_t,
-                   ROUND(ck * (1.0 - p_hat) * (1.0 - p_hat)
-                         + (nk - ck) * p_hat * p_hat, 9) AS bs_t
-            FROM j),
-        agg AS (
-            SELECT n, obar, SUM(rel_t) AS rel_s, SUM(res_t) AS res_s,
-                   SUM(bs_t) AS bs_s
-            FROM terms GROUP BY n, obar)
-        SELECT n AS n_test,
-               ROUND(bs_s / n, 6) AS brier,
-               ROUND(rel_s / n, 6) AS reliability,
-               ROUND(res_s / n, 6) AS resolution,
-               ROUND(obar * (1.0 - obar), 6) AS uncertainty
-        FROM agg
-    """
-
-
-def q_theils_u2(spark, sf_dir):
-    """Theil's U₂ forecast-skill ratio on the dense hourly series:
-    seasonal-naive (x[t−24]) vs the random-walk naive (x[t−1]) —
-    U₂ < 1 means the daily rhythm genuinely predicts (the skill
-    framing `holt_trend_cells`/`croston_cells` assume but never
-    test). Both SSEs are sums of squared INTEGER differences — exact
-    BIGINTs end to end, one final sqrt. One row with both MSEs.
-
-    Scale shape: one hour agg + two lag windows + a scalar agg."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    occ = ev.select(hour.alias("h")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    span = occ.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = (
-        span.select(F.explode(F.sequence("h0", "h1")).alias("h"))
-        .join(occ, "h", "left")
-        .select("h", F.coalesce("x", F.lit(0)).alias("x"))
-    )
-    w = Window.orderBy("h")
-    lagged = (
-        dense.withColumn("l1", F.lag("x", 1).over(w))
-        .withColumn("l24", F.lag("x", 24).over(w))
-        .filter(F.col("l24").isNotNull())
-    )
-    agg = lagged.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            (F.col("l24") - F.col("x")) * (F.col("l24") - F.col("x"))
-        ).alias("sse_seasonal"),
-        F.sum(
-            (F.col("l1") - F.col("x")) * (F.col("l1") - F.col("x"))
-        ).alias("sse_naive"),
-    )
-    return agg.select(
-        "n",
-        F.round(F.col("sse_seasonal") / F.col("n").cast("double"), 6).alias(
-            "mse_seasonal"
-        ),
-        F.round(F.col("sse_naive") / F.col("n").cast("double"), 6).alias(
-            "mse_naive"
-        ),
-        F.round(
-            F.sqrt(
-                F.col("sse_seasonal") / F.col("sse_naive").cast("double")
-            ),
-            6,
-        ).alias("theils_u2"),
-    )
-
-
-def _theils_u2_sql() -> str:
-    return """
-        WITH hrs AS (
-            SELECT CAST(FLOOR(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                       AS BIGINT) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hrs),
-        dense AS (
-            SELECT g.h, COALESCE(hrs.x, 0) AS x
-            FROM (SELECT UNNEST(range(h0, h1 + 1)) AS h FROM span) g
-            LEFT JOIN hrs USING (h)),
-        lagged AS (
-            SELECT x,
-                   LAG(x, 1) OVER (ORDER BY h) AS l1,
-                   LAG(x, 24) OVER (ORDER BY h) AS l24
-            FROM dense
-            QUALIFY l24 IS NOT NULL),
-        agg AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM((l24 - x) * (l24 - x)) AS BIGINT)
-                       AS sse_seasonal,
-                   CAST(SUM((l1 - x) * (l1 - x)) AS BIGINT) AS sse_naive
-            FROM lagged)
-        SELECT n,
-               ROUND(sse_seasonal / CAST(n AS DOUBLE), 6) AS mse_seasonal,
-               ROUND(sse_naive / CAST(n AS DOUBLE), 6) AS mse_naive,
-               ROUND(SQRT(sse_seasonal / CAST(sse_naive AS DOUBLE)), 6)
-                   AS theils_u2
-        FROM agg
-    """
-
-
-_MORISITA_RESOLUTIONS = (2, 3, 4)
-
-
-def q_morisita_index(spark, sf_dir):
-    """Morisita dispersion ladder I_δ(res) of the doc point pattern —
-    the quadrat-count clumping index (I = 1 CSR, > 1 clumped, < 1
-    uniform) whose CHANGE across quadrat sizes locates the clustering
-    scale (`quadrat_csr` tests one size; the ladder profiles):
-    I_δ = Q·Σx(x−1)/(N(N−1)) with Q the closed-form 4^res full-lattice
-    quadrat count (empty quadrats contribute 0 — never materialized).
-    ALL-INTEGER numerators; one float division per row.
-
-    Scale shape: one agg per resolution on the cell table."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    lat, lng = _latlng_cols(F.col("doc_id"))
-    legs = []
-    for res in _MORISITA_RESOLUTIONS:
-        cnt = d.groupBy(cell_encode_col(lat, lng, res).alias("cell")).agg(
-            F.count(F.lit(1)).alias("x")
-        )
-        q = 4 ** res
-        legs.append(
-            cnt.agg(
-                F.sum("x").alias("n"),
-                F.sum(F.col("x") * (F.col("x") - 1)).alias("sxx1"),
-                F.count(F.lit(1)).alias("occupied"),
-            ).select(
-                F.lit(res).alias("res"),
-                F.lit(q).cast("long").alias("quadrats"),
-                "occupied",
-                F.round(
-                    F.lit(float(q))
-                    * F.col("sxx1")
-                    / (F.col("n").cast("double") * (F.col("n") - 1)),
-                    6,
-                ).alias("morisita"),
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionAll(leg)
-    return out.orderBy("res")
-
-
-def _morisita_index_sql() -> str:
-    lat, lng = _latlng_sql("doc_id")
-    legs = []
-    for res in _MORISITA_RESOLUTIONS:
-        cell = cell_encode_sql(lat, lng, res)
-        q = 4 ** res
-        legs.append(f"""
-            SELECT {res} AS res, CAST({q} AS BIGINT) AS quadrats,
-                   occupied,
-                   ROUND({float(q)!r} * sxx1
-                         / (CAST(n AS DOUBLE) * (n - 1)), 6) AS morisita
-            FROM (SELECT CAST(SUM(x) AS BIGINT) AS n,
-                         CAST(SUM(x * (x - 1)) AS BIGINT) AS sxx1,
-                         CAST(COUNT(*) AS BIGINT) AS occupied
-                  FROM (SELECT {cell} AS cell,
-                               CAST(COUNT(*) AS BIGINT) AS x
-                        FROM documents GROUP BY 1))""")
-    union = " UNION ALL ".join(legs)
-    return f"SELECT * FROM ({union}) ORDER BY res"
-
-
-def q_xicor(spark, sf_dir):
-    """Chatterjee's ξ (xicor, JASA 2020) between event TIME and VALUE —
-    the modern dependence coefficient that detects ARBITRARY (not just
-    monotone) functional relationships where Pearson/Spearman read 0:
-    with the ties-aware form ξ = 1 − n·Σ|r_{i+1} − r_i| / (2·Σ l_i(n −
-    l_i)), rows ordered by (ts, event_id) (the paper's random tie-break
-    pinned deterministically), r_i = #{y_j ≤ y_i}, l_i = #{y_j ≥ y_i}
-    from the distinct-cents cumulative table. Ranks are exact BIGINTs;
-    the two big sums run in DOUBLE (documented: their relative error
-    ~1e−16 is six orders below the 6-dp output).
-
-    Scale shape: one distinct-value window for the rank table, one
-    broadcast join, one ordered lead — no pair join (the naive ξ is
-    O(n²))."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select(
-        "ts",
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    per = ev.groupBy("cents").agg(F.count(F.lit(1)).alias("c"))
-    wv = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
-    tot = per.agg(F.sum("c").alias("n"))
-    ranks = (
-        per.withColumn("cum", F.sum("c").over(wv))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "cents",
-            F.col("cum").alias("r"),
-            (F.col("n") - F.col("cum") + F.col("c")).alias("l"),
-            "n",
-        )
-    )
-    wx = Window.orderBy("ts", "event_id")
-    seq = (
-        ev.join(F.broadcast(ranks), "cents")
-        .withColumn("r_next", F.lead("r").over(wx))
-    )
-    agg = seq.agg(
-        F.max("n").alias("n"),
-        F.sum(F.abs(F.col("r_next") - F.col("r")).cast("double")).alias(
-            "sum_dr"
-        ),
-        F.sum(
-            (F.col("l").cast("double") * (F.col("n") - F.col("l")))
-        ).alias("den"),
-    )
-    return agg.select(
-        "n",
-        F.round(
-            1.0 - F.col("n") * F.col("sum_dr") / (2.0 * F.col("den")), 6
-        ).alias("xicor"),
-    )
-
-
-def _xicor_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT ts, event_id,
-                   CAST(ROUND(value * 100) AS BIGINT) AS cents
-            FROM events),
-        per AS (SELECT cents, CAST(COUNT(*) AS BIGINT) AS c
-                FROM ev GROUP BY cents),
-        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM per),
-        ranks AS (
-            SELECT cents, cum AS r, n - cum + c AS l, n
-            FROM (SELECT cents, c,
-                         SUM(c) OVER (ORDER BY cents
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS cum
-                  FROM per) CROSS JOIN tot),
-        seq AS (
-            SELECT r, l, n,
-                   LEAD(r) OVER (ORDER BY ts, event_id) AS r_next
-            FROM ev JOIN ranks USING (cents)),
-        agg AS (
-            SELECT CAST(MAX(n) AS BIGINT) AS n,
-                   SUM(CAST(ABS(r_next - r) AS DOUBLE)) AS sum_dr,
-                   SUM(CAST(l AS DOUBLE) * (n - l)) AS den
-            FROM seq)
-        SELECT n,
-               ROUND(1.0 - n * sum_dr / (2.0 * den), 6) AS xicor
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# CRPS, pinball loss, Kuiper circular test, knapsack DP fold (session 14)
-# ---------------------------------------------------------------------------
-
-
-def _dayhour_split(spark, sf_dir):
-    """Dense (day, hour) event-count grid split even/odd day-of-month —
-    the shared train/test panel for the probabilistic-forecast evals.
-    Returns (train, test) frames of (h, x)."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.date_trunc("day", "ts").alias("d"),
-        F.hour("ts").alias("h"),
-    )
-    per = ev.groupBy("d", "h").agg(F.count(F.lit(1)).alias("x"))
-    days = per.select("d").distinct()
-    hours = spark.range(0, 24).select(F.col("id").cast("int").alias("h"))
-    dense = (
-        days.crossJoin(F.broadcast(hours))
-        .join(per, ["d", "h"], "left")
-        .select(
-            "d",
-            "h",
-            F.coalesce("x", F.lit(0)).alias("x"),
-            (F.dayofmonth("d") % 2 == 0).alias("is_train"),
-        )
-    )
-    return (
-        dense.filter("is_train").select("h", "x"),
-        dense.filter(~F.col("is_train")).select("h", "x"),
-    )
-
-
-_DAYHOUR_SPLIT_SQL = """
-        per AS (
-            SELECT date_trunc('day', ts) AS d, hour(ts) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-        dense AS MATERIALIZED (
-            SELECT dd.d, hh.h, COALESCE(per.x, 0) AS x,
-                   dayofmonth(dd.d) % 2 = 0 AS is_train
-            FROM (SELECT DISTINCT d FROM per) dd
-            CROSS JOIN (SELECT UNNEST(range(0, 24)) AS h) hh
-            LEFT JOIN per ON per.d = dd.d AND per.h = hh.h),
-        train AS (SELECT h, x FROM dense WHERE is_train),
-        test AS (SELECT h, x FROM dense WHERE NOT is_train)"""
-
-
-def q_crps_eval(spark, sf_dir):
-    """CRPS of the per-hour empirical train distribution as a
-    probabilistic forecast for test-day hourly counts — the proper
-    score for FULL predictive distributions (`brier_decomposition`
-    scores binary outcomes; CRPS scores the count distribution)
-    via the exact closed form CRPS = E|X−y| − ½E|X−X′|: both
-    expectations are ALL-INTEGER |difference| sums over the bounded
-    day panel, one float tail. One row (n_test, crps, spread term).
-
-    Scale shape: per-hour train×train and train×test joins bounded by
-    days² × 24 — calendar-bounded, constant in data size."""
-    train, test = _dayhour_split(spark, sf_dir)
-    nh = train.groupBy("h").agg(F.count(F.lit(1)).alias("nh"))
-    spread = (
-        train.alias("a")
-        .join(train.alias("b"), "h")
-        .groupBy("h")
-        .agg(
-            F.sum(F.abs(F.col("a.x") - F.col("b.x"))).alias("sabs"),
-            F.count(F.lit(1)).alias("npairs"),
-        )
-        .select(
-            "h",
-            F.round(
-                F.col("sabs") / (2.0 * F.col("npairs")), 9
-            ).alias("t2"),
-        )
-    )
-    t1 = (
-        test.alias("y")
-        .join(train.alias("t"), "h")
-        .groupBy("h", F.col("y.x").alias("y"))
-        .agg(
-            F.sum(F.abs(F.col("t.x") - F.col("y.x"))).alias("sabs"),
-            F.count(F.lit(1)).alias("nt"),
-        )
-        .select(
-            "h",
-            "y",
-            F.round(F.col("sabs") / F.col("nt").cast("double"), 9).alias(
-                "t1"
-            ),
-        )
-    )
-    # join per-(h, y) group back to each test obs: group keys carry counts
-    percount = test.groupBy("h", F.col("x").alias("y")).agg(
-        F.count(F.lit(1)).alias("nobs")
-    )
-    obs = percount.join(t1, ["h", "y"]).join(F.broadcast(spread), "h")
-    agg = obs.agg(
-        F.sum("nobs").alias("n_test"),
-        F.round(
-            F.sum(F.col("nobs") * F.round(F.col("t1") - F.col("t2"), 9)),
-            9,
-        ).alias("s_crps"),
-        F.round(F.sum(F.col("nobs") * F.col("t2")), 9).alias("s_t2"),
-    )
-    return agg.select(
-        "n_test",
-        F.round(F.col("s_crps") / F.col("n_test"), 6).alias("crps"),
-        F.round(F.col("s_t2") / F.col("n_test"), 6).alias("mean_spread"),
-    )
-
-
-def _crps_eval_sql() -> str:
-    return f"""
-        WITH {_DAYHOUR_SPLIT_SQL},
-        spread AS (
-            SELECT h, ROUND(SUM(ABS(a.x - b.x))
-                            / (2.0 * COUNT(*)), 9) AS t2
-            FROM train a JOIN train b USING (h)
-            GROUP BY h),
-        t1 AS (
-            SELECT h, y.x AS y,
-                   ROUND(SUM(ABS(t.x - y.x)) / CAST(COUNT(*) AS DOUBLE), 9)
-                       AS t1
-            FROM test y JOIN train t USING (h)
-            GROUP BY h, y.x),
-        percount AS (
-            SELECT h, x AS y, CAST(COUNT(*) AS BIGINT) AS nobs
-            FROM test GROUP BY 1, 2),
-        obs AS (
-            SELECT p.nobs, t1.t1, s.t2
-            FROM percount p
-            JOIN t1 ON p.h = t1.h AND p.y = t1.y
-            JOIN spread s ON p.h = s.h),
-        agg AS (
-            SELECT CAST(SUM(nobs) AS BIGINT) AS n_test,
-                   ROUND(SUM(nobs * ROUND(t1 - t2, 9)), 9) AS s_crps,
-                   ROUND(SUM(nobs * t2), 9) AS s_t2
-            FROM obs)
-        SELECT n_test,
-               ROUND(s_crps / n_test, 6) AS crps,
-               ROUND(s_t2 / n_test, 6) AS mean_spread
-        FROM agg
-    """
-
-
-_PINBALL_QS = (1, 5, 9)  # tenths
-
-
-def q_pinball_loss(spark, sf_dir):
-    """Pinball (quantile) loss of per-hour train quantile forecasts
-    p10/p50/p90 on the test days — the quantile-forecast eval beside
-    `crps_eval` (CRPS integrates over all quantiles; pinball scores
-    the three operating points dashboards actually publish): q̂ = the
-    exact ⌈q·n⌉-th order statistic per hour (cross-multiplied integer
-    selection), 10×loss = max(k(y−q̂), (k−10)(y−q̂)) — ALL-INTEGER
-    sums, one division per row. Three rows (q, mean_qhat, pinball).
-
-    Scale shape: per-hour rank windows on the bounded day panel +
-    one broadcast join."""
-    from pyspark.sql import Window
-
-    train, test = _dayhour_split(spark, sf_dir)
-    wv = Window.partitionBy("h").orderBy("x").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    per = train.groupBy("h", "x").agg(F.count(F.lit(1)).alias("c"))
-    nh = train.groupBy("h").agg(F.count(F.lit(1)).alias("n"))
-    cum = per.withColumn("cum", F.sum("c").over(wv)).join(
-        F.broadcast(nh), "h"
-    )
-    legs = []
-    for k in _PINBALL_QS:
-        qhat = (
-            cum.filter(F.col("cum") * 10 >= F.col("n") * k)
-            .groupBy("h")
-            .agg(F.min("x").alias("qhat"))
-        )
-        loss = (
-            test.join(F.broadcast(qhat), "h")
-            .select(
-                F.greatest(
-                    F.lit(k) * (F.col("x") - F.col("qhat")),
-                    F.lit(k - 10) * (F.col("x") - F.col("qhat")),
-                ).alias("l10"),
-                "qhat",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_test"),
-                F.sum("l10").alias("s10"),
-                F.sum("qhat").alias("sq"),
-            )
-            .select(
-                F.lit(k / 10.0).alias("q"),
-                "n_test",
-                F.round(F.col("sq") / F.col("n_test").cast("double"), 6).alias(
-                    "mean_qhat"
-                ),
-                F.round(
-                    F.col("s10") / (10.0 * F.col("n_test")), 6
-                ).alias("pinball"),
-            )
-        )
-        legs.append(loss)
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionAll(leg)
-    return out.orderBy("q")
-
-
-def _pinball_loss_sql() -> str:
-    legs = []
-    for k in _PINBALL_QS:
-        legs.append(f"""
-            SELECT CAST({k / 10.0!r} AS DOUBLE) AS q,
-                   CAST(COUNT(*) AS BIGINT) AS n_test,
-                   ROUND(SUM(qhat) / CAST(COUNT(*) AS DOUBLE), 6)
-                       AS mean_qhat,
-                   ROUND(SUM(GREATEST({k} * (t.x - qhat),
-                                      {k - 10} * (t.x - qhat)))
-                         / (10.0 * COUNT(*)), 6) AS pinball
-            FROM test t JOIN (
-                SELECT h, MIN(x) AS qhat
-                FROM cum WHERE cum * 10 >= n * {k}
-                GROUP BY h) q ON t.h = q.h""")
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH {_DAYHOUR_SPLIT_SQL},
-        percnt AS (
-            SELECT h, x, CAST(COUNT(*) AS BIGINT) AS c
-            FROM train GROUP BY 1, 2),
-        nh AS (SELECT h, CAST(COUNT(*) AS BIGINT) AS n
-               FROM train GROUP BY h),
-        cum AS (
-            SELECT p.h, p.x, nh.n,
-                   SUM(p.c) OVER (PARTITION BY p.h ORDER BY p.x
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND CURRENT ROW) AS cum
-            FROM percnt p JOIN nh ON p.h = nh.h)
-        SELECT * FROM ({union}) ORDER BY q
-    """
-
-
-def q_kuiper_test(spark, sf_dir):
-    """Kuiper's V test of hour-of-day uniformity — the CIRCULAR KS
-    (rotation-invariant, equally sensitive at any phase — plain KS
-    underweights deviations near the wrap point; `ks_two_sample`
-    compares linear samples): V = D⁺ + D⁻ against the uniform CDF
-    over the 24 bins, both suprema from EXACT integer numerators
-    24·cum_h − (h+1)·n. One row (n, v, v_scaled = V·(√n + 0.155 +
-    0.24/√n), the standard finite-n scaling).
-
-    Scale shape: one (hour) agg + an O(24) window."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select(F.hour("ts").alias("h"))
-    per = ev.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
-    w = Window.orderBy("h").rowsBetween(Window.unboundedPreceding, 0)
-    tot = per.agg(F.sum("c").alias("n"))
-    nums = (
-        per.withColumn("cum", F.sum("c").over(w))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "n",
-            (F.lit(24) * F.col("cum") - (F.col("h") + 1) * F.col("n")).alias(
-                "num"
-            ),
-        )
-    )
-    agg = nums.groupBy("n").agg(
-        F.greatest(F.max("num"), F.lit(0)).alias("dplus_num"),
-        F.greatest(-F.min("num"), F.lit(0)).alias("dminus_num"),
-    )
-    v = (F.col("dplus_num") + F.col("dminus_num")) / (
-        24.0 * F.col("n").cast("double")
-    )
-    return agg.select(
-        "n",
-        F.round(v, 6).alias("v"),
-        F.round(
-            v
-            * (
-                F.sqrt(F.col("n").cast("double"))
-                + 0.155
-                + 0.24 / F.sqrt(F.col("n").cast("double"))
-            ),
-            6,
-        ).alias("v_scaled"),
-    )
-
-
-def _kuiper_test_sql() -> str:
-    return """
-        WITH per AS (
-            SELECT hour(ts) AS h, CAST(COUNT(*) AS BIGINT) AS c
-            FROM events GROUP BY 1),
-        tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM per),
-        nums AS (
-            SELECT n,
-                   24 * SUM(c) OVER (ORDER BY h
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - (h + 1) * n AS num
-            FROM per CROSS JOIN tot),
-        agg AS (
-            SELECT n,
-                   GREATEST(MAX(num), 0) AS dplus_num,
-                   GREATEST(-MIN(num), 0) AS dminus_num
-            FROM nums GROUP BY n)
-        SELECT n,
-               ROUND((dplus_num + dminus_num) / (24.0 * n), 6) AS v,
-               ROUND((dplus_num + dminus_num) / (24.0 * n)
-                     * (SQRT(CAST(n AS DOUBLE)) + 0.155
-                        + 0.24 / SQRT(CAST(n AS DOUBLE))), 6) AS v_scaled
-        FROM agg
-    """
-
-
-_KNAPSACK_B = 40
-
-
-def _knapsack_step(dialect: str) -> str:
-    """One 0/1-knapsack DP update on the (B+1)-slot value array: acc'[b]
-    = max(acc[b], acc[b−cost] + value for b ≥ cost); element = [value,
-    cost]. Array state in a fold — the DP-carrying dataflow shape."""
-    if dialect == "spark":
-        v, c = "element_at(el, 1)", "element_at(el, 2)"
-        return (
-            f"transform(sequence(0, {_KNAPSACK_B}), b -> "
-            f"CASE WHEN b >= {c} THEN greatest(element_at(acc, b + 1), "
-            f"element_at(acc, CAST(b - {c} AS INT) + 1) + {v}) "
-            f"ELSE element_at(acc, b + 1) END)"
-        )
-    v, c = "el[1]", "el[2]"
-    return (
-        f"list_transform(range(0, {_KNAPSACK_B + 1}), b -> "
-        f"CASE WHEN b >= {c} THEN greatest(acc[b + 1], "
-        f"acc[CAST(b - {c} AS BIGINT) + 1] + {v}) "
-        f"ELSE acc[b + 1] END)"
-    )
-
-
-def q_knapsack_sites(spark, sf_dir):
-    """0/1 knapsack site selection over res-2 tiles — maximize covered
-    purchase demand under a budget of B = 40 cost units (cost_i = 1 +
-    cell mod 16, the deterministic synthetic weight that makes the
-    trade-off nontrivial; value_i = purchase count) — the EXACT
-    optimizer twin of `greedy_set_cover` (greedy approximates; this
-    DP is optimal): the whole table is ONE ordered array fold whose
-    state is the (B+1)-slot value vector (the Croston fold discipline
-    extended to ARRAY-state DP). All-integer values; optimum at B and
-    at B/2 reported, plus the greedy-by-density value for comparison.
-
-    Scale shape: one grid-bounded agg + one bounded fold; DP state
-    O(B) regardless of data size."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    per = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(cell_encode_col(lat, lng, 2).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("v"))
-        .select(
-            "cell",
-            "v",
-            (1 + F.pmod(F.col("cell"), F.lit(16))).alias("cost"),
-        )
-    )
-    series = per.groupBy().agg(
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(cell, v, "
-            "cost))), s -> array(CAST(s.v AS DOUBLE), "
-            "CAST(s.cost AS DOUBLE))), "
-            f"array_repeat(0.0D, {_KNAPSACK_B + 1}), "
-            f"(acc, el) -> {_knapsack_step('spark')})"
-        ).alias("dp"),
-        F.count(F.lit(1)).alias("n_items"),
-        F.sum("cost").alias("total_cost"),
-    )
-    # greedy-by-density comparison: take items in (v/cost desc, cell)
-    # order while they fit — one window + running cost
-    from pyspark.sql import Window
-
-    wg = Window.orderBy(
-        F.desc(F.round(F.col("v") / F.col("cost").cast("double"), 9)),
-        "cell",
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    greedy = (
-        per.withColumn("cumcost", F.sum("cost").over(wg))
-        .filter(F.col("cumcost") <= _KNAPSACK_B)
-        .agg(F.sum("v").alias("greedy_value"))
-    )
-    return (
-        series.crossJoin(F.broadcast(greedy))
-        .select(
-            "n_items",
-            "total_cost",
-            F.element_at("dp", _KNAPSACK_B + 1)
-            .cast("long")
-            .alias("best_value"),
-            F.element_at("dp", _KNAPSACK_B // 2 + 1)
-            .cast("long")
-            .alias("best_value_half"),
-            F.coalesce("greedy_value", F.lit(0)).alias("greedy_value"),
-        )
-    )
-
-
-def _knapsack_sites_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    zeros = ", ".join(["0.0"] * (_KNAPSACK_B + 1))
-    return f"""
-        WITH per AS MATERIALIZED (
-            SELECT cell, v, 1 + cell % 16 AS cost
-            FROM (SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS v
-                  FROM events WHERE event_type = 'purchase'
-                  GROUP BY 1)),
-        folded AS (
-            SELECT list_reduce(
-                       list_prepend(CAST([{zeros}] AS DOUBLE[]),
-                           list_transform(
-                               list_sort(list(struct_pack(cell := cell,
-                                                          v := v,
-                                                          cost := cost))),
-                               s -> [CAST(s.v AS DOUBLE),
-                                     CAST(s.cost AS DOUBLE)])),
-                       (acc, el) -> {_knapsack_step('duckdb')}) AS dp,
-                   CAST(COUNT(*) AS BIGINT) AS n_items,
-                   CAST(SUM(cost) AS BIGINT) AS total_cost
-            FROM per),
-        greedy AS (
-            SELECT CAST(COALESCE(SUM(v), 0) AS BIGINT) AS greedy_value
-            FROM (SELECT v, SUM(cost) OVER (
-                      ORDER BY ROUND(v / CAST(cost AS DOUBLE), 9) DESC,
-                               cell
-                      ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND CURRENT ROW) AS cumcost
-                  FROM per)
-            WHERE cumcost <= {_KNAPSACK_B})
-        SELECT n_items, total_cost,
-               CAST(dp[{_KNAPSACK_B + 1}] AS BIGINT) AS best_value,
-               CAST(dp[{_KNAPSACK_B // 2 + 1}] AS BIGINT)
-                   AS best_value_half,
-               greedy_value
-        FROM folded CROSS JOIN greedy
-    """
-
-
-# ---------------------------------------------------------------------------
-# AD 2-sample, segmented trend, PPCC fit, turning points (session 14)
-# ---------------------------------------------------------------------------
-
-
-def q_anderson_darling(spark, sf_dir):
-    """Two-sample Anderson-Darling test of weekend vs weekday
-    transaction values — the tail-sensitive omnibus alternative to
-    `ks_two_sample` (KS sees only the max gap; AD weights the tails
-    by 1/(i(N−i))): A² = (1/nm)·Σ_{i<N} (N·M_i − n·i)²/(i(N−i)) over
-    pooled order positions, expanded EXACTLY over tie blocks (within
-    a block of equal values, M_i is the constant cum-x count, so the
-    block's positions explode from one sequence — linear, no sort of
-    raw rows). Numerators exact BIGINTs, one division per term
-    (9-dp), one row.
-
-    Scale shape: one distinct-cents agg + an O(N) position explode +
-    scalar tail."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        F.dayofweek("ts").isin(1, 7).cast("long").alias("wkd"),
-    )
-    per = ev.groupBy("cents").agg(
-        F.sum("wkd").alias("cx"),
-        F.sum(F.lit(1) - F.col("wkd")).alias("cy"),
-    )
-    w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
-    tot = per.agg(
-        F.sum("cx").alias("n"), F.sum("cy").alias("m")
-    )
-    cum = (
-        per.withColumn("cumx", F.sum("cx").over(w))
-        .withColumn("cumall", F.sum(F.col("cx") + F.col("cy")).over(w))
-        .crossJoin(F.broadcast(tot))
-    )
-    # Guard: Spark's sequence(a, b) DESCENDS when a > b (the final tie
-    # block when it starts at position N) — filter empty ranges first,
-    # matching DuckDB's empty range()
-    pos = cum.filter(
-        F.col("cumall") - F.col("cx") - F.col("cy") + 1
-        <= F.least(F.col("cumall"), F.col("n") + F.col("m") - 1)
-    ).select(
-        "n",
-        "m",
-        F.col("cumx").alias("mi"),
-        F.explode(
-            F.sequence(
-                F.col("cumall") - F.col("cx") - F.col("cy") + 1,
-                F.least(F.col("cumall"), F.col("n") + F.col("m") - 1),
-            )
-        ).alias("i"),
-    )
-    nn = F.col("n") + F.col("m")
-    term = (
-        (nn * F.col("mi") - F.col("n") * F.col("i"))
-        * (nn * F.col("mi") - F.col("n") * F.col("i"))
-    ).cast("double") / (F.col("i") * (nn - F.col("i"))).cast("double")
-    agg = pos.groupBy("n", "m").agg(
-        F.sum(F.round(term, 9)).alias("s")
-    )
-    return agg.select(
-        "n",
-        "m",
-        F.round(
-            F.col("s") / (F.col("n").cast("double") * F.col("m")), 6
-        ).alias("a2"),
-    )
-
-
-def _anderson_darling_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT CAST(ROUND(value * 100) AS BIGINT) AS cents,
-                   CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
-                       AS wkd
-            FROM events),
-        per AS (
-            SELECT cents, CAST(SUM(wkd) AS BIGINT) AS cx,
-                   CAST(SUM(1 - wkd) AS BIGINT) AS cy
-            FROM ev GROUP BY cents),
-        tot AS (SELECT CAST(SUM(cx) AS BIGINT) AS n,
-                       CAST(SUM(cy) AS BIGINT) AS m
-                FROM per),
-        cum AS (
-            SELECT cx, cy, n, m,
-                   SUM(cx) OVER (ORDER BY cents
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cumx,
-                   SUM(cx + cy) OVER (ORDER BY cents
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cumall
-            FROM per CROSS JOIN tot),
-        pos AS (
-            -- windowed SUM yields HUGEINT in DuckDB; range() needs BIGINT
-            SELECT n, m, cumx AS mi,
-                   UNNEST(range(CAST(cumall - cx - cy + 1 AS BIGINT),
-                                CAST(LEAST(cumall, n + m - 1) + 1
-                                     AS BIGINT))) AS i
-            FROM cum),
-        agg AS (
-            SELECT n, m,
-                   SUM(ROUND(CAST((n + m) * mi - n * i AS DOUBLE)
-                             * ((n + m) * mi - n * i)
-                             / CAST(i * (n + m - i) AS DOUBLE), 9)) AS s
-            FROM pos GROUP BY n, m)
-        SELECT n, m,
-               ROUND(s / (CAST(n AS DOUBLE) * m), 6) AS a2
-        FROM agg
-    """
-
-
-def q_broken_stick(spark, sf_dir):
-    """Segmented (broken-stick) regression of the daily event-count
-    trend with an exact exhaustive breakpoint search — the
-    SLOPE-CHANGE detector beside `changepoint_detect` (mean shift)
-    and `page_hinkley` (sequential): for every candidate day b the
-    two-segment RSS comes from exact BIGINT prefix moments (RSS_seg =
-    (Cyy − Cxy²/Cxx)/n_seg, products through DOUBLE), argmin pinned
-    by 9-dp rounding with the smaller b on ties. One row: breakpoint,
-    both slopes, the broken vs single-line RSS.
-
-    Scale shape: calendar-bounded candidate table (≤ days rows), one
-    window of prefix sums + one scalar tail."""
-    from pyspark.sql import Window
-
-    days = (
-        _read(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    wd = Window.orderBy("day")
-    base = days.select(F.row_number().over(wd).alias("i"), "y")
-    wc = Window.orderBy("i").rowsBetween(Window.unboundedPreceding, 0)
-    idx = base.select(
-        "i",
-        "y",
-        F.sum("i").over(wc).alias("si"),
-        F.sum("y").over(wc).alias("sy"),
-        F.sum(F.col("i") * F.col("y")).over(wc).alias("sxy"),
-        F.sum(F.col("i") * F.col("i")).over(wc).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).over(wc).alias("syy"),
-    ).localCheckpoint(eager=True)
-    tot = idx.orderBy(F.desc("i")).limit(1).select(
-        F.col("i").alias("n"),
-        F.col("si").alias("tsi"),
-        F.col("sy").alias("tsy"),
-        F.col("sxy").alias("tsxy"),
-        F.col("sxx").alias("tsxx"),
-        F.col("syy").alias("tsyy"),
-    )
-
-    def rss(nseg, si, sy, sxy, sxx, syy):
-        cxx = (nseg * sxx - si * si).cast("double")
-        cxy = (nseg * sxy - si * sy).cast("double")
-        cyy = (nseg * syy - sy * sy).cast("double")
-        return (cyy - cxy * cxy / cxx) / (
-            nseg.cast("double") * nseg.cast("double")
-        )
-
-    def slope(nseg, si, sy, sxy, sxx):
-        cxx = (nseg * sxx - si * si).cast("double")
-        cxy = (nseg * sxy - si * sy).cast("double")
-        return cxy / cxx
-
-    cand = idx.crossJoin(F.broadcast(tot)).filter(
-        (F.col("i") >= 3) & (F.col("i") <= F.col("n") - 3)
-    )
-    left_n = F.col("i")
-    right_n = F.col("n") - F.col("i")
-    r_si = F.col("tsi") - F.col("si")
-    r_sy = F.col("tsy") - F.col("sy")
-    r_sxy = F.col("tsxy") - F.col("sxy")
-    r_sxx = F.col("tsxx") - F.col("sxx")
-    r_syy = F.col("tsyy") - F.col("syy")
-    scored = cand.select(
-        "i",
-        "n",
-        F.round(
-            rss(left_n, F.col("si"), F.col("sy"), F.col("sxy"),
-                F.col("sxx"), F.col("syy"))
-            + rss(right_n, r_si, r_sy, r_sxy, r_sxx, r_syy),
-            9,
-        ).alias("rss2"),
-        F.round(
-            slope(left_n, F.col("si"), F.col("sy"), F.col("sxy"),
-                  F.col("sxx")),
-            6,
-        ).alias("slope_left"),
-        F.round(slope(right_n, r_si, r_sy, r_sxy, r_sxx), 6).alias(
-            "slope_right"
-        ),
-    )
-    wmin = Window.orderBy("rss2", "i")
-    best = scored.withColumn("rk", F.row_number().over(wmin)).filter(
-        F.col("rk") == 1
-    )
-    single = tot.select(
-        F.round(
-            rss(F.col("n"), F.col("tsi"), F.col("tsy"), F.col("tsxy"),
-                F.col("tsxx"), F.col("tsyy")),
-            6,
-        ).alias("rss_single")
-    )
-    return best.crossJoin(F.broadcast(single)).select(
-        F.col("n").alias("n_days"),
-        F.col("i").alias("break_day"),
-        "slope_left",
-        "slope_right",
-        F.round("rss2", 6).alias("rss_broken"),
-        "rss_single",
-    )
-
-
-def _broken_stick_sql() -> str:
-    return """
-        WITH days AS (
-            SELECT date_trunc('day', ts) AS day,
-                   CAST(COUNT(*) AS BIGINT) AS y
-            FROM events GROUP BY 1),
-        idx AS MATERIALIZED (
-            SELECT i, y,
-                   SUM(i) OVER wcum AS si,
-                   SUM(y) OVER wcum AS sy,
-                   SUM(i * y) OVER wcum AS sxy,
-                   SUM(i * i) OVER wcum AS sxx,
-                   SUM(y * y) OVER wcum AS syy
-            FROM (SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, y
-                  FROM days)
-            WINDOW wcum AS (ORDER BY i
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        tot AS (
-            SELECT i AS n, si AS tsi, sy AS tsy, sxy AS tsxy,
-                   sxx AS tsxx, syy AS tsyy
-            FROM idx ORDER BY i DESC LIMIT 1),
-        scored AS (
-            SELECT i, n,
-                   ROUND(
-                     ((i * syy - sy * sy)
-                      - CAST(i * sxy - si * sy AS DOUBLE)
-                        * (i * sxy - si * sy)
-                        / (i * sxx - si * si))
-                     / (CAST(i AS DOUBLE) * i)
-                   + (((n - i) * (tsyy - syy)
-                       - (tsy - sy) * (tsy - sy))
-                      - CAST((n - i) * (tsxy - sxy)
-                             - (tsi - si) * (tsy - sy) AS DOUBLE)
-                        * ((n - i) * (tsxy - sxy)
-                           - (tsi - si) * (tsy - sy))
-                        / ((n - i) * (tsxx - sxx)
-                           - (tsi - si) * (tsi - si)))
-                     / (CAST(n - i AS DOUBLE) * (n - i)), 9) AS rss2,
-                   ROUND(CAST(i * sxy - si * sy AS DOUBLE)
-                         / (i * sxx - si * si), 6) AS slope_left,
-                   ROUND(CAST((n - i) * (tsxy - sxy)
-                              - (tsi - si) * (tsy - sy) AS DOUBLE)
-                         / ((n - i) * (tsxx - sxx)
-                            - (tsi - si) * (tsi - si)), 6) AS slope_right
-            FROM idx CROSS JOIN tot
-            WHERE i >= 3 AND i <= n - 3),
-        best AS (
-            SELECT * FROM scored
-            ORDER BY rss2, i LIMIT 1),
-        single AS (
-            SELECT ROUND(((n * tsyy - tsy * tsy)
-                          - CAST(n * tsxy - tsi * tsy AS DOUBLE)
-                            * (n * tsxy - tsi * tsy)
-                            / (n * tsxx - tsi * tsi))
-                         / (CAST(n AS DOUBLE) * n), 6) AS rss_single
-            FROM tot)
-        SELECT n AS n_days, i AS break_day, slope_left, slope_right,
-               ROUND(rss2, 6) AS rss_broken, rss_single
-        FROM best CROSS JOIN single
-    """
-
-
-def q_ppcc_expon(spark, sf_dir):
-    """Probability-plot correlation coefficient for the exponential fit
-    of per-user inter-event gaps — the GRAPHICAL goodness-of-fit
-    companion to `interarrival_fit` (which estimates parameters but
-    never tests shape): r between the sorted integer-second gaps and
-    the theoretical quantiles −ln(1 − (i−0.5)/n); r ≈ 1 = exponential
-    (Poisson process), low r = burst structure. Gap moments exact
-    BIGINTs; the ln quantiles are single libm ops on exact ratios.
-    One row (n, lambda_hat, ppcc_r).
-
-    Scale shape: one lag window per user; the global rank is the
-    TWO-PHASE row_number (per-gap-value buckets + broadcast offsets —
-    no O(rows) single-partition window; equal gaps may permute within a
-    bucket, which leaves every PPCC sum unchanged since their g is
-    identical) + scalar moments."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gaps = (
-        ev.select(ts_us.alias("t0"), F.lead(ts_us).over(w).alias("t1"))
-        .filter(F.col("t1").isNotNull())
-        .select(
-            F.floor((F.col("t1") - F.col("t0")) / F.lit(1_000_000)).alias(
-                "g"
-            )
-        )
-    )
-    tot = gaps.agg(F.count(F.lit(1)).alias("n"), F.sum("g").alias("sg"))
-    ranked = _two_phase_row_number(
-        gaps, F.col("g"), [F.col("g")], out="i"
-    ).crossJoin(F.broadcast(tot))
-    t = F.round(
-        -F.log(1.0 - (F.col("i") - 0.5) / F.col("n").cast("double")), 9
-    )
-    mom = ranked.select(
-        "n", "sg", F.col("g"), t.alias("t")
-    ).agg(
-        F.max("n").alias("n"),
-        F.max("sg").alias("sg"),
-        F.round(F.sum("t"), 9).alias("st"),
-        F.round(F.sum(F.col("t") * F.col("t")), 9).alias("stt"),
-        F.round(F.sum(F.col("g") * F.col("t")), 9).alias("sgt"),
-        F.sum(F.col("g") * F.col("g")).alias("sgg"),
-    )
-    n = F.col("n").cast("double")
-    cgt = n * F.col("sgt") - F.col("sg") * F.col("st")
-    cgg = n * F.col("sgg") - F.col("sg").cast("double") * F.col("sg")
-    ctt = n * F.col("stt") - F.col("st") * F.col("st")
-    return mom.select(
-        "n",
-        F.round(F.col("n") / F.col("sg").cast("double") * 1_000_000, 9).alias(
-            "lambda_per_sec_e6"
-        ),
-        F.round(cgt / F.sqrt(cgg * ctt), 6).alias("ppcc_r"),
-    )
-
-
-def _ppcc_expon_sql() -> str:
-    return """
-        WITH gaps AS (
-            SELECT CAST(FLOOR((t1 - t0) / 1000000) AS BIGINT) AS g
-            FROM (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS t0,
-                         LEAD(epoch_us(CAST(ts AS TIMESTAMP)))
-                             OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS t1
-                  FROM events)
-            WHERE t1 IS NOT NULL),
-        tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                       CAST(SUM(g) AS BIGINT) AS sg
-                FROM gaps),
-        ranked AS (
-            SELECT g, ROW_NUMBER() OVER (ORDER BY g) AS i, n, sg
-            FROM gaps CROSS JOIN tot),
-        mom AS (
-            SELECT MAX(n) AS n, MAX(sg) AS sg,
-                   ROUND(SUM(t), 9) AS st,
-                   ROUND(SUM(t * t), 9) AS stt,
-                   ROUND(SUM(g * t), 9) AS sgt,
-                   CAST(SUM(g * g) AS BIGINT) AS sgg
-            FROM (SELECT g, n, sg,
-                         ROUND(-LN(1.0 - (i - 0.5)
-                                   / CAST(n AS DOUBLE)), 9) AS t
-                  FROM ranked))
-        SELECT n,
-               ROUND(n / CAST(sg AS DOUBLE) * 1000000, 9)
-                   AS lambda_per_sec_e6,
-               ROUND((n * sgt - sg * st)
-                     / SQRT((n * stt - st * st)
-                            * (n * sgg - CAST(sg AS DOUBLE) * sg)), 6)
-                   AS ppcc_r
-        FROM mom
-    """
-
-
-def q_turning_points(spark, sf_dir):
-    """Turning-point randomness test on the dense hourly series — the
-    local-extrema count against its closed-form null (E[T] =
-    2(n−2)/3, Var = (16n−29)/90): too FEW strict turning points =
-    trend/smooth rhythm, too many = high-frequency alternation; the
-    i.i.d. screen beside `runs_test` (level-based) — this one is
-    SHAPE-based. Strict extrema only (plateau ties excluded,
-    documented). All counts exact; one float tail.
-
-    Scale shape: one hour agg + one ordered window."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("ts")
-    hour = F.expr(
-        "CAST(FLOOR(unix_micros(CAST(ts AS TIMESTAMP)) / 3600000000.0) AS BIGINT)"
-    )
-    occ = ev.select(hour.alias("h")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    span = occ.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    dense = (
-        span.select(F.explode(F.sequence("h0", "h1")).alias("h"))
-        .join(occ, "h", "left")
-        .select("h", F.coalesce("x", F.lit(0)).alias("x"))
-    )
-    w = Window.orderBy("h")
-    tri = (
-        dense.withColumn("p", F.lag("x").over(w))
-        .withColumn("nx", F.lead("x").over(w))
-        .filter(F.col("p").isNotNull() & F.col("nx").isNotNull())
-    )
-    tp = (
-        ((F.col("p") < F.col("x")) & (F.col("x") > F.col("nx")))
-        | ((F.col("p") > F.col("x")) & (F.col("x") < F.col("nx")))
-    ).cast("long")
-    agg = tri.agg(
-        (F.count(F.lit(1)) + 2).alias("n"), F.sum(tp).alias("t_obs")
-    )
-    n = F.col("n").cast("double")
-    et = 2.0 * (n - 2.0) / 3.0
-    vt = (16.0 * n - 29.0) / 90.0
-    return agg.select(
-        "n",
-        "t_obs",
-        F.round(et, 6).alias("e_t"),
-        F.round((F.col("t_obs") - et) / F.sqrt(vt), 6).alias("z"),
-    )
-
-
-def _turning_points_sql() -> str:
-    return """
-        WITH hrs AS (
-            SELECT CAST(FLOOR(epoch_us(CAST(ts AS TIMESTAMP)) / 3600000000.0)
-                       AS BIGINT) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        span AS (SELECT MIN(h) AS h0, MAX(h) AS h1 FROM hrs),
-        dense AS (
-            SELECT g.h, COALESCE(hrs.x, 0) AS x
-            FROM (SELECT UNNEST(range(h0, h1 + 1)) AS h FROM span) g
-            LEFT JOIN hrs USING (h)),
-        tri AS (
-            SELECT x,
-                   LAG(x) OVER (ORDER BY h) AS p,
-                   LEAD(x) OVER (ORDER BY h) AS nx
-            FROM dense
-            QUALIFY p IS NOT NULL AND nx IS NOT NULL),
-        agg AS (
-            SELECT CAST(COUNT(*) + 2 AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN (p < x AND x > nx)
-                                   OR (p > x AND x < nx)
-                            THEN 1 ELSE 0 END) AS BIGINT) AS t_obs
-            FROM tri)
-        SELECT n, t_obs,
-               ROUND(2.0 * (n - 2.0) / 3.0, 6) AS e_t,
-               ROUND((t_obs - 2.0 * (n - 2.0) / 3.0)
-                     / SQRT((16.0 * n - 29.0) / 90.0), 6) AS z
-        FROM agg
-    """
-
-
-# ---------------------------------------------------------------------------
-# skyline, Shapley data valuation, DEA, robust scale (session 14)
-# ---------------------------------------------------------------------------
-
-
-def q_skyline_sites(spark, sf_dir):
-    """Pareto skyline of res-2 tiles over (demand, reach, monetary) —
-    the classic DOMINANCE query (keep every tile no other tile beats
-    on all three criteria at once): the preference-free companion to
-    `topsis_sites` (which imposes weights; the skyline is what ANY
-    monotone scorer could pick). Dominance strict-on-one/≥-on-all on
-    exact BIGINT aggregates; anti-join against the dominators.
-
-    Scale shape: the dominance join is cells × cells on the
-    grid-bounded aggregate (never raw rows); output ordered by
-    demand desc."""
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id", "user_id", "value", "event_type"
-    )
-    lat, lng = _latlng_cols(F.col("event_id"))
-    per = ev.groupBy(cell_encode_col(lat, lng, 2).alias("cell")).agg(
-        F.count(F.lit(1)).alias("demand"),
-        F.countDistinct("user_id").alias("reach"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("monetary"),
-    ).localCheckpoint(eager=True)
-    a, b = per.alias("a"), per.alias("b")
-    dominated = (
-        a.join(
-            b,
-            (F.col("b.demand") >= F.col("a.demand"))
-            & (F.col("b.reach") >= F.col("a.reach"))
-            & (F.col("b.monetary") >= F.col("a.monetary"))
-            & (
-                (F.col("b.demand") > F.col("a.demand"))
-                | (F.col("b.reach") > F.col("a.reach"))
-                | (F.col("b.monetary") > F.col("a.monetary"))
-            ),
-        )
-        .select(F.col("a.cell").alias("cell"))
-        .distinct()
-    )
-    return (
-        per.join(dominated, "cell", "left_anti")
-        .orderBy(F.desc("demand"), "cell")
-    )
-
-
-def _skyline_sites_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 2)
-    return f"""
-        WITH per AS MATERIALIZED (
-            SELECT {cell} AS cell,
-                   CAST(COUNT(*) AS BIGINT) AS demand,
-                   CAST(COUNT(DISTINCT user_id) AS BIGINT) AS reach,
-                   CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-                       AS monetary
-            FROM events GROUP BY 1),
-        dominated AS (
-            SELECT DISTINCT a.cell
-            FROM per a JOIN per b
-              ON b.demand >= a.demand AND b.reach >= a.reach
-             AND b.monetary >= a.monetary
-             AND (b.demand > a.demand OR b.reach > a.reach
-                  OR b.monetary > a.monetary))
-        SELECT per.* FROM per
-        ANTI JOIN dominated USING (cell)
-        ORDER BY demand DESC, cell
-    """
-
-
-_SHAPLEY_TOP_SOURCES = 5
-
-
-def q_shapley_coverage(spark, sf_dir):
-    """Shapley data valuation of the top-5 sources under the vocabulary
-    COVERAGE game — what each source is truly worth to corpus
-    diversity, with duplicated vocabulary split fairly: for coverage
-    games the Shapley value collapses to the EXACT closed form φ_i =
-    Σ_{{tokens t ∋ i}} 1/|owners(t)| (a token shared by k of the top
-    sources gives each 1/k), and the Banzhaf index to Σ 1/2^(k−1) —
-    no 2^n subset enumeration. The marginal-value lens beside
-    `dsir_weights` (importance) and `source_delta` (drift): unique
-    vocabulary is worth 1, commodity vocabulary ~0. Exact integer k
-    per token; 9-dp reciprocal sums.
-
-    Scale shape: one (token → owner-set-size) agg + one weighted
-    agg — the doc_tfidf_terms dataflow."""
-    docs = _read(spark, sf_dir, "documents").select("source", "text")
-    top = (
-        docs.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "source")
-        .limit(_SHAPLEY_TOP_SOURCES)
-        .select("source")
-    )
-    toks = (
-        docs.join(F.broadcast(top), "source")
-        .select("source", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.length("tok") >= 1)
-        .distinct()
-    )
-    owners = toks.groupBy("tok").agg(
-        F.countDistinct("source").alias("k")
-    )
-    phi = (
-        toks.join(F.broadcast(owners), "tok")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.sum(F.round(1.0 / F.col("k"), 9)), 6).alias(
-                "shapley"
-            ),
-            F.round(
-                F.sum(F.round(F.pow(0.5, F.col("k") - 1), 9)), 6
-            ).alias("banzhaf"),
-        )
-    )
-    tot = phi.agg(F.round(F.sum("shapley"), 9).alias("tot"))
-    return (
-        phi.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_tokens",
-            "shapley",
-            "banzhaf",
-            F.round(F.col("shapley") / F.col("tot"), 6).alias("share"),
-        )
-        .orderBy(F.desc("shapley"), "source")
-    )
-
-
-def _shapley_coverage_sql() -> str:
-    return f"""
-        WITH top AS (
-            SELECT source FROM documents GROUP BY source
-            ORDER BY COUNT(*) DESC, source LIMIT {_SHAPLEY_TOP_SOURCES}),
-        toks AS MATERIALIZED (
-            SELECT DISTINCT source, tok
-            FROM (SELECT d.source,
-                         UNNEST(string_split(d.text, ' ')) AS tok
-                  FROM documents d JOIN top USING (source))
-            WHERE length(tok) >= 1),
-        owners AS (
-            SELECT tok, CAST(COUNT(DISTINCT source) AS BIGINT) AS k
-            FROM toks GROUP BY tok),
-        phi AS (
-            SELECT source,
-                   CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                   ROUND(SUM(ROUND(1.0 / k, 9)), 6) AS shapley,
-                   ROUND(SUM(ROUND(POWER(0.5, k - 1), 9)), 6) AS banzhaf
-            FROM toks JOIN owners USING (tok)
-            GROUP BY source),
-        tot AS (SELECT ROUND(SUM(shapley), 9) AS tot FROM phi)
-        SELECT source, n_tokens, shapley, banzhaf,
-               ROUND(shapley / tot, 6) AS share
-        FROM phi CROSS JOIN tot
-        ORDER BY shapley DESC, source
-    """
-
-
-def q_dea_efficiency(spark, sf_dir):
-    """DEA (CCR, single-input) efficiency of res-2 tiles — outputs
-    (events, purchases) per unit of doc supply, each tile judged
-    under its OWN most favorable output weights: with one input the
-    CCR program collapses to the exact closed form eff_i = max_j
-    (o_ij/x_i)/(max_k o_kj/x_k) — no LP needed. The frontier lens
-    beside `sfca_accessibility` (supply/demand) and `topsis_sites`
-    (fixed weights): eff = 1 marks the efficient frontier. Ratios
-    9-dp; frontier flag computed on the rounded value (no knife
-    edge).
-
-    Scale shape: one grid-bounded agg + two broadcast scalar maxes."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    elat, elng = _latlng_cols(F.col("event_id"))
-    outs = ev.groupBy(cell_encode_col(elat, elng, 2).alias("cell")).agg(
-        F.count(F.lit(1)).alias("o_events"),
-        F.sum((F.col("event_type") == "purchase").cast("long")).alias(
-            "o_purch"
-        ),
-    )
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    dlat, dlng = _latlng_cols(F.col("doc_id"))
-    docs = d.groupBy(cell_encode_col(dlat, dlng, 2).alias("cell")).agg(
-        F.count(F.lit(1)).alias("x")
-    )
-    j = outs.join(docs, "cell").filter(F.col("x") > 0)
-    r = j.select(
-        "cell",
-        "x",
-        "o_events",
-        "o_purch",
-        F.round(F.col("o_events") / F.col("x").cast("double"), 9).alias(
-            "r1"
-        ),
-        F.round(F.col("o_purch") / F.col("x").cast("double"), 9).alias(
-            "r2"
-        ),
-    )
-    best = r.agg(
-        F.max("r1").alias("b1"), F.max("r2").alias("b2")
-    )
-    eff = r.crossJoin(F.broadcast(best)).select(
-        "cell",
-        "x",
-        "o_events",
-        "o_purch",
-        F.round(
-            F.greatest(
-                F.col("r1") / F.col("b1"), F.col("r2") / F.col("b2")
-            ),
-            6,
-        ).alias("efficiency"),
-    )
-    return eff.select(
-        "cell",
-        "x",
-        "o_events",
-        "o_purch",
-        "efficiency",
-        (F.col("efficiency") >= 1.0).cast("int").alias("on_frontier"),
-    ).orderBy(F.desc("efficiency"), "cell").limit(15)
-
-
-def _dea_efficiency_sql() -> str:
-    elat, elng = _latlng_sql("event_id")
-    dlat, dlng = _latlng_sql("doc_id")
-    ecell = cell_encode_sql(elat, elng, 2)
-    dcell = cell_encode_sql(dlat, dlng, 2)
-    return f"""
-        WITH outs AS (
-            SELECT {ecell} AS cell,
-                   CAST(COUNT(*) AS BIGINT) AS o_events,
-                   CAST(SUM(CASE WHEN event_type = 'purchase'
-                                 THEN 1 ELSE 0 END) AS BIGINT) AS o_purch
-            FROM events GROUP BY 1),
-        docs AS (
-            SELECT {dcell} AS cell, CAST(COUNT(*) AS BIGINT) AS x
-            FROM documents GROUP BY 1),
-        r AS (
-            SELECT o.cell, d.x, o.o_events, o.o_purch,
-                   ROUND(o.o_events / CAST(d.x AS DOUBLE), 9) AS r1,
-                   ROUND(o.o_purch / CAST(d.x AS DOUBLE), 9) AS r2
-            FROM outs o JOIN docs d ON o.cell = d.cell
-            WHERE d.x > 0),
-        best AS (SELECT MAX(r1) AS b1, MAX(r2) AS b2 FROM r)
-        SELECT cell, x, o_events, o_purch,
-               ROUND(GREATEST(r1 / b1, r2 / b2), 6) AS efficiency,
-               CAST(CASE WHEN ROUND(GREATEST(r1 / b1, r2 / b2), 6) >= 1.0
-                         THEN 1 ELSE 0 END AS INT) AS on_frontier
-        FROM r CROSS JOIN best
-        ORDER BY efficiency DESC, cell LIMIT 15
-    """
-
-
-def q_qn_scale(spark, sf_dir):
-    """Rousseeuw-Croux Qn robust scale of the daily event counts — the
-    50%-breakdown dispersion estimator that, unlike MAD
-    (`mad_outliers`), needs NO location estimate and keeps 82%
-    Gaussian efficiency: Qn = 2.2219 · {|x_i − x_j| : i < j}_(k),
-    k = C(h,2), h = ⌊n/2⌋+1 — an exact order statistic over the
-    calendar-bounded pairwise-difference table, selected by
-    row_number (ties → pair order). One row beside the classic scale
-    trio (sd / MAD / IQR) computed from the same moments.
-
-    Scale shape: days² pairs (~435) — constant in data size."""
-    from pyspark.sql import Window
-
-    days = (
-        _read(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("x"))
-    )
-    wd = Window.orderBy("day")
-    idx = days.select(
-        F.row_number().over(wd).alias("i"), "x"
-    ).localCheckpoint(eager=True)
-    n_row = idx.agg(F.count(F.lit(1)).alias("n"))
-    pairs = (
-        idx.alias("a")
-        .join(idx.alias("b"), F.col("a.i") < F.col("b.i"))
-        .select(
-            F.abs(F.col("a.x") - F.col("b.x")).alias("d"),
-            F.col("a.i").alias("i"),
-            F.col("b.i").alias("j"),
-        )
-    )
-    wp = Window.orderBy("d", "i", "j")
-    ranked = pairs.withColumn("rn", F.row_number().over(wp)).crossJoin(
-        F.broadcast(n_row)
-    )
-    h = F.floor(F.col("n") / 2) + 1
-    k = (h * (h - 1) / 2).cast("long")
-    qn_d = ranked.filter(F.col("rn") == k).select(
-        F.col("d").alias("qn_raw"), "n"
-    )
-    mom = idx.agg(
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.count(F.lit(1)).alias("nn"),
-    )
-    sd = F.sqrt(
-        (
-            F.col("sxx") - F.col("sx").cast("double") * F.col("sx") / F.col("nn")
-        )
-        / (F.col("nn") - 1)
-    )
-    return qn_d.crossJoin(F.broadcast(mom)).select(
-        F.col("n").alias("n_days"),
-        "qn_raw",
-        F.round(F.lit(2.2219) * F.col("qn_raw"), 6).alias("qn"),
-        F.round(sd, 6).alias("sd"),
-    )
-
-
-def _qn_scale_sql() -> str:
-    return """
-        WITH days AS (
-            SELECT date_trunc('day', ts) AS day,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1),
-        idx AS MATERIALIZED (
-            SELECT ROW_NUMBER() OVER (ORDER BY day) AS i, x
-            FROM days),
-        nr AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM idx),
-        pairs AS (
-            SELECT ABS(a.x - b.x) AS d, a.i AS i, b.i AS j
-            FROM idx a JOIN idx b ON a.i < b.i),
-        ranked AS (
-            SELECT d, ROW_NUMBER() OVER (ORDER BY d, i, j) AS rn, n
-            FROM pairs CROSS JOIN nr),
-        qn AS (
-            SELECT d AS qn_raw, n
-            FROM ranked
-            WHERE rn = CAST((CAST(FLOOR(n / 2) AS BIGINT) + 1)
-                            * CAST(FLOOR(n / 2) AS BIGINT) / 2 AS BIGINT)),
-        mom AS (
-            SELECT CAST(SUM(x) AS BIGINT) AS sx,
-                   CAST(SUM(x * x) AS BIGINT) AS sxx,
-                   CAST(COUNT(*) AS BIGINT) AS nn
-            FROM idx)
-        SELECT n AS n_days, qn_raw,
-               ROUND(CAST(2.2219 AS DOUBLE) * qn_raw, 6) AS qn,
-               ROUND(SQRT((sxx - CAST(sx AS DOUBLE) * sx / nn)
-                          / (nn - 1)), 6) AS sd
-        FROM qn CROSS JOIN mom
-    """
-
-
-# ---------------------------------------------------------------------------
-# fluctuation scaling, confounding, growth accounting (session 14)
-# ---------------------------------------------------------------------------
-
-
-def q_taylors_law(spark, sf_dir):
-    """Taylor's power law Var = a·Mean^b across res-3 tiles' hourly
-    event counts — the fluctuation-scaling exponent (b ≈ 1 Poisson,
-    b → 2 synchronized bursts) that calibrates every per-tile
-    count model (`fano_factor` gives per-tile dispersion; Taylor's b
-    is the CROSS-tile scaling law): per-tile mean/variance from
-    exact BIGINT moments over the shared dense hour count, then the
-    ln-ln OLS slope over tiles (9-dp terms, variance > 0 only). One
-    row (n_cells, slope_b, intercept_ln_a, r2).
-
-    Scale shape: one (cell, hour) agg + grid-bounded moments."""
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    ch = (
-        ev.groupBy(
-            cell_encode_col(lat, lng, 3).alias("cell"),
-            F.date_trunc("hour", "ts").alias("h"),
-        )
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    n_hours = ch.select("h").distinct().count()
-    per = ch.groupBy("cell").agg(
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    nh = F.lit(float(n_hours))
-    mean = F.col("sx") / nh
-    var = (F.col("sxx") - F.col("sx") * F.col("sx") / nh) / (nh - 1)
-    pts = per.select(
-        F.round(F.log(mean), 9).alias("lx"),
-        F.round(F.log(var), 9).alias("ly"),
-    ).filter(var > 0)
-    mom = pts.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("lx").alias("sx"),
-        F.sum("ly").alias("sy"),
-        F.sum(F.col("lx") * F.col("lx")).alias("sxx"),
-        F.sum(F.col("lx") * F.col("ly")).alias("sxy"),
-        F.sum(F.col("ly") * F.col("ly")).alias("syy"),
-    )
-    n = F.col("n")
-    cxy = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    cxx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    cyy = n * F.col("syy") - F.col("sy") * F.col("sy")
-    return mom.select(
-        n.cast("long").alias("n_cells"),
-        F.round(cxy / cxx, 6).alias("slope_b"),
-        F.round(
-            (F.col("sy") - cxy / cxx * F.col("sx")) / n, 6
-        ).alias("intercept_ln_a"),
-        F.round(cxy * cxy / (cxx * cyy), 6).alias("r2"),
-    )
-
-
-def _taylors_law_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH ch AS MATERIALIZED (
-            SELECT {cell} AS cell, date_trunc('hour', ts) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-        nh AS (SELECT CAST(COUNT(DISTINCT h) AS DOUBLE) AS nh FROM ch),
-        pts AS (
-            SELECT ROUND(LN(sx / nh), 9) AS lx,
-                   ROUND(LN((sxx - sx * sx / nh) / (nh - 1)), 9) AS ly
-            FROM (SELECT cell, CAST(SUM(x) AS BIGINT) AS sx,
-                         CAST(SUM(x * x) AS BIGINT) AS sxx
-                  FROM ch GROUP BY cell)
-            CROSS JOIN nh
-            WHERE (sxx - sx * sx / nh) / (nh - 1) > 0),
-        mom AS (
-            SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                   SUM(lx) AS sx, SUM(ly) AS sy,
-                   SUM(lx * lx) AS sxx, SUM(lx * ly) AS sxy,
-                   SUM(ly * ly) AS syy
-            FROM pts)
-        SELECT CAST(n AS BIGINT) AS n_cells,
-               ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
-                   AS slope_b,
-               ROUND((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx)
-                     / n, 6) AS intercept_ln_a,
-               ROUND((n * sxy - sx * sy) * (n * sxy - sx * sy)
-                     / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-                   AS r2
-        FROM mom
-    """
-
-
-def q_simpsons_paradox(spark, sf_dir):
-    """Simpson's-paradox screen on the value→conversion relationship:
-    the POOLED slope of conversion on integer-cent value vs the
-    per-source within-stratum slopes — the aggregation-reversal
-    audit (`maup_audit` checks spatial aggregation; this checks
-    categorical confounding by source). Each slope is the exact
-    cross-multiplied OLS form (products through DOUBLE); output one
-    row per source plus the 'POOLED' row, with flipped = sign differs
-    from pooled (compared on 6-dp values).
-
-    Scale shape: one (source) moment agg — single pass, no joins."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-        (F.col("event_type") == "purchase").cast("long").alias("y"),
-        (F.pmod(F.col("user_id"), F.lit(4))).alias("stratum"),
-    )
-    by = ev.groupBy("stratum").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("v").alias("sv"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("v") * F.col("y")).alias("svy"),
-        F.sum(F.col("v").cast("double") * F.col("v")).alias("svv"),
-    )
-    pooled = by.agg(
-        F.sum("n").alias("n"),
-        F.sum("sv").alias("sv"),
-        F.sum("sy").alias("sy"),
-        F.sum("svy").alias("svy"),
-        F.sum("svv").alias("svv"),
-    ).withColumn("stratum", F.lit(-1).cast("long"))
-    allrows = by.unionByName(pooled)
-
-    def slope():
-        n = F.col("n").cast("double")
-        return F.round(
-            (n * F.col("svy") - F.col("sv").cast("double") * F.col("sy"))
-            / (n * F.col("svv") - F.col("sv").cast("double") * F.col("sv")),
-            9,
-        )
-
-    sl = allrows.select("stratum", "n", slope().alias("slope"))
-    psl = sl.filter(F.col("stratum") == -1).select(
-        F.col("slope").alias("pooled_slope")
-    )
-    return (
-        sl.crossJoin(F.broadcast(psl))
-        .select(
-            "stratum",
-            "n",
-            F.round(F.col("slope") * 1e6, 6).alias("slope_per_m_cents"),
-            (
-                (F.col("slope") > 0) != (F.col("pooled_slope") > 0)
-            ).cast("int").alias("flipped"),
-        )
-        .orderBy("stratum")
-    )
-
-
-def _simpsons_paradox_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT CAST(ROUND(value * 100) AS BIGINT) AS v,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-                   user_id % 4 AS stratum
-            FROM events),
-        by_s AS (
-            SELECT stratum, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(v) AS BIGINT) AS sv,
-                   CAST(SUM(y) AS BIGINT) AS sy,
-                   CAST(SUM(v * y) AS BIGINT) AS svy,
-                   SUM(CAST(v AS DOUBLE) * v) AS svv
-            FROM ev GROUP BY stratum),
-        allrows AS (
-            SELECT * FROM by_s
-            UNION ALL
-            SELECT -1 AS stratum, CAST(SUM(n) AS BIGINT),
-                   CAST(SUM(sv) AS BIGINT), CAST(SUM(sy) AS BIGINT),
-                   CAST(SUM(svy) AS BIGINT), SUM(svv)
-            FROM by_s),
-        sl AS (
-            SELECT stratum, n,
-                   ROUND((n * svy - CAST(sv AS DOUBLE) * sy)
-                         / (n * svv - CAST(sv AS DOUBLE) * sv), 9)
-                       AS slope
-            FROM allrows),
-        psl AS (SELECT slope AS pooled_slope FROM sl WHERE stratum = -1)
-        SELECT stratum, n,
-               ROUND(slope * 1e6, 6) AS slope_per_m_cents,
-               CAST(CASE WHEN (slope > 0) != (pooled_slope > 0)
-                         THEN 1 ELSE 0 END AS INT) AS flipped
-        FROM sl CROSS JOIN psl
-        ORDER BY stratum
-    """
-
-
-def q_partial_correlation(spark, sf_dir):
-    """Partial correlation r(events, purchases · docs) across res-3
-    tiles — does event volume relate to purchases BEYOND what doc
-    supply explains? The three pairwise correlations from one pass of
-    exact BIGINT moments, then the closed form r₁₂·₃ = (r₁₂ −
-    r₁₃r₂₃)/√((1−r₁₃²)(1−r₂₃²)) — the confounder-removal scalar
-    beside `simpsons_paradox` (categorical) and `gwr_cells` (local).
-    One row with all three raw r's and the partial.
-
-    Scale shape: one grid-bounded 3-variable moment agg."""
-    cells = _doc_event_cells(spark, sf_dir, 3)
-    ev = _read(spark, sf_dir, "events").select("event_id", "event_type")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    purch = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(cell_encode_col(lat, lng, 3).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("p"))
-    )
-    j = cells.join(purch, "cell", "left").select(
-        F.col("e").alias("x1"),
-        F.coalesce("p", F.lit(0)).alias("x2"),
-        F.col("d").alias("x3"),
-    )
-    mom = j.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"x{i}").alias(f"s{i}") for i in (1, 2, 3)],
-        *[
-            F.sum(F.col(f"x{a}") * F.col(f"x{b}")).alias(f"s{a}{b}")
-            for a, b in ((1, 1), (2, 2), (3, 3), (1, 2), (1, 3), (2, 3))
-        ],
-    )
-
-    def r(a, b):
-        n = F.col("n")
-        num = (n * F.col(f"s{a}{b}") - F.col(f"s{a}") * F.col(f"s{b}")).cast(
-            "double"
-        )
-        da = (n * F.col(f"s{a}{a}") - F.col(f"s{a}") * F.col(f"s{a}")).cast(
-            "double"
-        )
-        db = (n * F.col(f"s{b}{b}") - F.col(f"s{b}") * F.col(f"s{b}")).cast(
-            "double"
-        )
-        return F.round(num / F.sqrt(da * db), 9)
-
-    withr = mom.select(
-        F.col("n").alias("n_cells"),
-        r(1, 2).alias("r12"),
-        r(1, 3).alias("r13"),
-        r(2, 3).alias("r23"),
-    )
-    partial = F.round(
-        (F.col("r12") - F.col("r13") * F.col("r23"))
-        / F.sqrt(
-            (1.0 - F.col("r13") * F.col("r13"))
-            * (1.0 - F.col("r23") * F.col("r23"))
-        ),
-        6,
-    )
-    return withr.select(
-        "n_cells",
-        F.round("r12", 6).alias("r_events_purch"),
-        F.round("r13", 6).alias("r_events_docs"),
-        F.round("r23", 6).alias("r_purch_docs"),
-        partial.alias("partial_r"),
-    )
-
-
-def _partial_correlation_sql() -> str:
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    return f"""
-        WITH cells AS (
-            SELECT cell, d, e FROM {_doc_event_cells_sql(3)}),
-        purch AS (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS p
-            FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        j AS (
-            SELECT c.e AS x1, COALESCE(p.p, 0) AS x2, c.d AS x3
-            FROM cells c LEFT JOIN purch p ON c.cell = p.cell),
-        mom AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(x1) AS BIGINT) AS s1,
-                   CAST(SUM(x2) AS BIGINT) AS s2,
-                   CAST(SUM(x3) AS BIGINT) AS s3,
-                   CAST(SUM(x1 * x1) AS BIGINT) AS s11,
-                   CAST(SUM(x2 * x2) AS BIGINT) AS s22,
-                   CAST(SUM(x3 * x3) AS BIGINT) AS s33,
-                   CAST(SUM(x1 * x2) AS BIGINT) AS s12,
-                   CAST(SUM(x1 * x3) AS BIGINT) AS s13,
-                   CAST(SUM(x2 * x3) AS BIGINT) AS s23
-            FROM j),
-        rr AS (
-            SELECT n,
-                   ROUND(CAST(n * s12 - s1 * s2 AS DOUBLE)
-                         / SQRT(CAST(n * s11 - s1 * s1 AS DOUBLE)
-                                * (n * s22 - s2 * s2)), 9) AS r12,
-                   ROUND(CAST(n * s13 - s1 * s3 AS DOUBLE)
-                         / SQRT(CAST(n * s11 - s1 * s1 AS DOUBLE)
-                                * (n * s33 - s3 * s3)), 9) AS r13,
-                   ROUND(CAST(n * s23 - s2 * s3 AS DOUBLE)
-                         / SQRT(CAST(n * s22 - s2 * s2 AS DOUBLE)
-                                * (n * s33 - s3 * s3)), 9) AS r23
-            FROM mom)
-        SELECT n AS n_cells,
-               ROUND(r12, 6) AS r_events_purch,
-               ROUND(r13, 6) AS r_events_docs,
-               ROUND(r23, 6) AS r_purch_docs,
-               ROUND((r12 - r13 * r23)
-                     / SQRT((1.0 - r13 * r13) * (1.0 - r23 * r23)), 6)
-                   AS partial_r
-        FROM rr
-    """
-
-
-def q_growth_accounting(spark, sf_dir):
-    """Daily active-user growth accounting — the product-analytics
-    identity DAU_t = new_t + retained_t + resurrected_t (with
-    churned_t = DAU_{t−1} − retained_t) over exact per-user
-    first-seen and lag-day windows — the decomposition behind every
-    'where did the users go' dashboard (`event_funnel` follows one
-    journey; this balances the whole population daily). All counts
-    exact; the identity is emitted so the oracle PINS it. Last 10
-    days.
-
-    Scale shape: one (user, day) distinct agg + two windows — the
-    sessionization shuffle shape."""
-    from pyspark.sql import Window
-
-    ud = (
-        _read(spark, sf_dir, "events")
-        .select("user_id", F.date_trunc("day", "ts").alias("d"))
-        .distinct()
-    )
-    w = Window.partitionBy("user_id").orderBy("d")
-    lab = ud.select(
-        "user_id",
-        "d",
-        F.row_number().over(w).alias("visit_no"),
-        F.lag("d").over(w).alias("prev_d"),
-    ).select(
-        "d",
-        F.when(F.col("visit_no") == 1, "new")
-        .when(
-            F.col("prev_d") == F.col("d") - F.expr("INTERVAL 1 DAY"),
-            "retained",
-        )
-        .otherwise("resurrected")
-        .alias("kind"),
-    )
-    per = lab.groupBy("d").pivot(
-        "kind", ["new", "retained", "resurrected"]
-    ).agg(F.count(F.lit(1)))
-    wd = Window.orderBy("d")
-    dau = lab.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
-    out = (
-        dau.join(per, "d")
-        .select(
-            "d",
-            "dau",
-            *[
-                F.coalesce(k, F.lit(0)).alias(f"n_{k}")
-                for k in ("new", "retained", "resurrected")
-            ],
-        )
-        .withColumn("prev_dau", F.lag("dau").over(wd))
-        .withColumn(
-            "n_churned",
-            F.coalesce(F.col("prev_dau") - F.col("n_retained"), F.lit(0)),
-        )
-    )
-    return (
-        out.select(
-            F.date_format("d", "yyyy-MM-dd").alias("day"),
-            "dau",
-            "n_new",
-            "n_retained",
-            "n_resurrected",
-            "n_churned",
-        )
-        .orderBy(F.desc("day"))
-        .limit(10)
-    )
-
-
-def _growth_accounting_sql() -> str:
-    return """
-        WITH ud AS (
-            SELECT DISTINCT user_id, date_trunc('day', ts) AS d
-            FROM events),
-        lab AS (
-            SELECT d,
-                   CASE WHEN visit_no = 1 THEN 'new'
-                        WHEN prev_d = d - INTERVAL 1 DAY THEN 'retained'
-                        ELSE 'resurrected' END AS kind
-            FROM (SELECT user_id, d,
-                         ROW_NUMBER() OVER (PARTITION BY user_id
-                             ORDER BY d) AS visit_no,
-                         LAG(d) OVER (PARTITION BY user_id
-                             ORDER BY d) AS prev_d
-                  FROM ud)),
-        per AS (
-            SELECT d,
-                   CAST(COUNT(*) AS BIGINT) AS dau,
-                   CAST(SUM(CASE WHEN kind = 'new' THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_new,
-                   CAST(SUM(CASE WHEN kind = 'retained' THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_retained,
-                   CAST(SUM(CASE WHEN kind = 'resurrected'
-                                 THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_resurrected
-            FROM lab GROUP BY d),
-        out AS (
-            SELECT d, dau, n_new, n_retained, n_resurrected,
-                   COALESCE(LAG(dau) OVER (ORDER BY d) - n_retained, 0)
-                       AS n_churned
-            FROM per)
-        SELECT strftime(d, '%Y-%m-%d') AS day,
-               dau, n_new, n_retained, n_resurrected, n_churned
-        FROM out
-        ORDER BY day DESC LIMIT 10
-    """
-
-
-# ---------------------------------------------------------------------------
-# survival discrimination, block-maxima EVT, exact TSP, log loss
-# (session 14)
-# ---------------------------------------------------------------------------
-
-
-def q_harrell_c(spark, sf_dir):
-    """Harrell's concordance index for a weekend-start risk score on
-    per-user inter-event gaps — the survival DISCRIMINATION metric
-    (`roc_auc` ignores censoring; C-index counts only comparable
-    pairs: i's event time observed AND earlier than j's follow-up):
-    with the binary score, concordant/tied/discordant pair counts
-    collapse to grouped products of exact BIGINT counts over the
-    distinct gap-second table — no O(n²) pair join. C = (conc +
-    ties/2)/comparable. One row.
-
-    Scale shape: one distinct-gap agg + one cumulative window + a
-    grouped-product tail."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    endt = ev.agg(F.max(ts_us).alias("endu"))
-    gaps = (
-        ev.select(
-            F.dayofweek("ts").isin(1, 7).cast("long").alias("risk"),
-            ts_us.alias("t0"),
-            F.lead(ts_us).over(w).alias("t1"),
-        )
-        .crossJoin(F.broadcast(endt))
-        .select(
-            "risk",
-            F.floor(
-                (F.coalesce("t1", "endu") - F.col("t0")) / F.lit(1_000_000)
-            ).alias("g"),
-            F.col("t1").isNotNull().cast("long").alias("event"),
-        )
-    )
-    per = gaps.groupBy("g").agg(
-        F.sum(F.col("event") * F.col("risk")).alias("e1"),
-        F.sum(F.col("event") * (1 - F.col("risk"))).alias("e0"),
-        F.sum(F.col("risk")).alias("a1"),
-        F.sum(1 - F.col("risk")).alias("a0"),
-    )
-    wg = Window.orderBy("g").rowsBetween(Window.unboundedPreceding, 0)
-    tot = per.agg(F.sum("a1").alias("n1"), F.sum("a0").alias("n0"))
-    cum = (
-        per.withColumn("c1", F.sum("a1").over(wg))
-        .withColumn("c0", F.sum("a0").over(wg))
-        .crossJoin(F.broadcast(tot))
-    )
-    # for an event at gap g with risk r, comparable partners are ALL
-    # subjects (any risk) with follow-up strictly > g: later1/later0
-    later1 = F.col("n1") - F.col("c1")
-    later0 = F.col("n0") - F.col("c0")
-    # risk-1 predicted SHORTER time (higher risk): concordant when the
-    # early event has risk 1 and the later subject risk 0
-    agg = cum.agg(
-        F.sum(F.col("e1") * later0).alias("conc"),
-        F.sum(F.col("e0") * later1).alias("disc"),
-        F.sum(F.col("e1") * later1 + F.col("e0") * later0).alias("ties"),
-    )
-    comp = F.col("conc") + F.col("disc") + F.col("ties")
-    return agg.select(
-        F.col("conc"),
-        F.col("disc"),
-        F.col("ties").alias("tied_risk"),
-        F.round(
-            (F.col("conc") + 0.5 * F.col("ties")) / comp.cast("double"), 6
-        ).alias("c_index"),
-    )
-
-
-def _harrell_c_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
-                       AS risk,
-                   epoch_us(CAST(ts AS TIMESTAMP)) AS t0,
-                   LEAD(epoch_us(CAST(ts AS TIMESTAMP)))
-                       OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                       AS t1
-            FROM events),
-        endt AS (SELECT MAX(t0) AS endu FROM ev),
-        gaps AS (
-            SELECT risk,
-                   CAST(FLOOR((COALESCE(t1, endu) - t0) / 1000000)
-                       AS BIGINT) AS g,
-                   CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS event
-            FROM ev CROSS JOIN endt),
-        per AS (
-            SELECT g,
-                   CAST(SUM(event * risk) AS BIGINT) AS e1,
-                   CAST(SUM(event * (1 - risk)) AS BIGINT) AS e0,
-                   CAST(SUM(risk) AS BIGINT) AS a1,
-                   CAST(SUM(1 - risk) AS BIGINT) AS a0
-            FROM gaps GROUP BY g),
-        tot AS (SELECT CAST(SUM(a1) AS BIGINT) AS n1,
-                       CAST(SUM(a0) AS BIGINT) AS n0
-                FROM per),
-        cum AS (
-            SELECT e1, e0,
-                   SUM(a1) OVER (ORDER BY g
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS c1,
-                   SUM(a0) OVER (ORDER BY g
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS c0,
-                   n1, n0
-            FROM per CROSS JOIN tot),
-        agg AS (
-            SELECT CAST(SUM(e1 * (n0 - c0)) AS BIGINT) AS conc,
-                   CAST(SUM(e0 * (n1 - c1)) AS BIGINT) AS disc,
-                   CAST(SUM(e1 * (n1 - c1) + e0 * (n0 - c0)) AS BIGINT)
-                       AS ties
-            FROM cum)
-        SELECT conc, disc, ties AS tied_risk,
-               ROUND((conc + 0.5 * ties)
-                     / CAST(conc + disc + ties AS DOUBLE), 6) AS c_index
-        FROM agg
-    """
-
-
-def q_gumbel_maxima(spark, sf_dir):
-    """Gumbel fit of DAILY MAXIMUM hourly event counts — block-maxima
-    EVT beside `gpd_tail`'s peaks-over-threshold (the two classic
-    routes to the same tail; agreement is the cross-check): per-day
-    max over the dense hour grid (exact integers), method-of-moments
-    β = s·√6/π, μ = m − γβ (pinned Euler-Mascheroni literal), plus
-    the 30-day return level μ − β·ln(−ln(1 − 1/30)). One row.
-
-    Scale shape: one (day, hour) agg + per-day max + scalar
-    moments."""
-    ev = _read(spark, sf_dir, "events").select("ts")
-    per = ev.groupBy(
-        F.date_trunc("day", "ts").alias("d"),
-        F.date_trunc("hour", "ts").alias("h"),
-    ).agg(F.count(F.lit(1)).alias("x"))
-    dmax = per.groupBy("d").agg(F.max("x").alias("mx"))
-    mom = dmax.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("mx").alias("sx"),
-        F.sum(F.col("mx") * F.col("mx")).alias("sxx"),
-    )
-    n = F.col("n").cast("double")
-    mean = F.col("sx") / n
-    sd = F.sqrt(
-        (F.col("sxx") - F.col("sx").cast("double") * F.col("sx") / n)
-        / (n - 1)
-    )
-    beta = F.round(sd * F.lit(0.7796968012336293), 9)  # sqrt(6)/pi
-    mu = F.round(mean - F.lit(0.5772156649015329) * beta, 9)
-    import math
-
-    rl = mu - beta * F.lit(math.log(-math.log(1.0 - 1.0 / 30.0)))
-    return mom.select(
-        F.col("n").alias("n_days"),
-        F.round(mean, 6).alias("mean_daily_max"),
-        F.round(mu, 6).alias("gumbel_mu"),
-        F.round(beta, 6).alias("gumbel_beta"),
-        F.round(rl, 6).alias("return_level_30d"),
-    )
-
-
-def _gumbel_maxima_sql() -> str:
-    return """
-        WITH per AS (
-            SELECT date_trunc('day', ts) AS d, date_trunc('hour', ts) AS h,
-                   CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1, 2),
-        dmax AS (SELECT d, CAST(MAX(x) AS BIGINT) AS mx
-                 FROM per GROUP BY d),
-        mom AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(mx) AS BIGINT) AS sx,
-                   CAST(SUM(mx * mx) AS BIGINT) AS sxx
-            FROM dmax)
-        SELECT n AS n_days,
-               ROUND(sx / CAST(n AS DOUBLE), 6) AS mean_daily_max,
-               ROUND(ROUND(sx / CAST(n AS DOUBLE)
-                     - 0.5772156649015329
-                       * ROUND(SQRT((sxx - CAST(sx AS DOUBLE) * sx / n)
-                                    / (n - 1))
-                               * 0.7796968012336293, 9), 9), 6)
-                   AS gumbel_mu,
-               ROUND(ROUND(SQRT((sxx - CAST(sx AS DOUBLE) * sx / n)
-                                / (n - 1)) * 0.7796968012336293, 9), 6)
-                   AS gumbel_beta,
-               ROUND(ROUND(sx / CAST(n AS DOUBLE)
-                     - 0.5772156649015329
-                       * ROUND(SQRT((sxx - CAST(sx AS DOUBLE) * sx / n)
-                                    / (n - 1))
-                               * 0.7796968012336293, 9), 9)
-                     - ROUND(SQRT((sxx - CAST(sx AS DOUBLE) * sx / n)
-                                  / (n - 1)) * 0.7796968012336293, 9)
-                       * LN(-LN(1.0 - 1.0 / 30.0)), 6)
-                   AS return_level_30d
-        FROM mom
-    """
-
-
-def _tsp_perm_rows() -> list[tuple[int, int, int, int]]:
-    """(perm_id, seq, rank_from, rank_to) closed-tour legs for every
-    cyclic-canonical permutation of sites 1..6 (site 1 fixed first —
-    5! = 120 tours, 720 literal legs). Data-independent, generated
-    from one source for both engines."""
-    from itertools import permutations
-
-    rows = []
-    for pid, perm in enumerate(permutations(range(2, 7))):
-        tour = (1,) + perm + (1,)
-        for seq in range(6):
-            rows.append((pid, seq, tour[seq], tour[seq + 1]))
-    return rows
-
-
-def q_tsp_sites(spark, sf_dir):
-    """Exact optimal TSP tour over the 6 Gonzalez k-center sites — the
-    routing layer on top of the coreset (`kcenter_coreset` picks the
-    depots; this sequences the service loop): all 5! = 120
-    closed-tour permutations evaluated from a LITERAL leg table
-    (data-independent, one generator for both engines), leg lengths
-    √(integer d²) rounded 9-dp, optimum by (length, perm_id). Exact
-    by exhaustion — the certified baseline any TSP heuristic would
-    be judged against. One row: best tour length, its permutation
-    id, the mean tour length (how good random routing would be).
-
-    Scale shape: the site table is O(k) from the driver loop; the
-    tour evaluation is a 720-row literal join — constant."""
-    d = _read(spark, sf_dir, "documents").select("doc_id")
-    ix, iy = _int_xy_cols(F.col("doc_id"))
-    pts = d.select(ix.alias("ix"), iy.alias("iy")).distinct().localCheckpoint(
-        eager=True
-    )
-    first = pts.orderBy("ix", "iy").limit(1).collect()[0]
-    sel = [(int(first["ix"]), int(first["iy"]))]
-    for _ in range(2, _KCENTER_K + 1):
-        dists = [
-            (F.col("ix") - F.lit(sx)) * (F.col("ix") - F.lit(sx))
-            + (F.col("iy") - F.lit(sy)) * (F.col("iy") - F.lit(sy))
-            for sx, sy in sel
-        ]
-        dist = dists[0] if len(dists) == 1 else F.least(*dists)
-        far = (
-            pts.select("ix", "iy", dist.alias("d2"))
-            .orderBy(F.desc("d2"), "ix", "iy")
-            .limit(1)
-            .collect()[0]
-        )
-        sel.append((int(far["ix"]), int(far["iy"])))
-    sites = spark.createDataFrame(
-        [(r + 1, x, y) for r, (x, y) in enumerate(sel)],
-        "rank int, ix long, iy long",
-    )
-    legs = spark.createDataFrame(
-        _tsp_perm_rows(), "pid int, seq int, ra int, rb int"
-    )
-    a = sites.select(
-        F.col("rank").alias("ra"),
-        F.col("ix").alias("ax"),
-        F.col("iy").alias("ay"),
-    )
-    b = sites.select(
-        F.col("rank").alias("rb"),
-        F.col("ix").alias("bx"),
-        F.col("iy").alias("by"),
-    )
-    lens = (
-        legs.join(F.broadcast(a), "ra")
-        .join(F.broadcast(b), "rb")
-        .groupBy("pid")
-        .agg(
-            F.round(
-                F.sum(
-                    F.round(
-                        F.sqrt(
-                            (
-                                (F.col("ax") - F.col("bx"))
-                                * (F.col("ax") - F.col("bx"))
-                                + (F.col("ay") - F.col("by"))
-                                * (F.col("ay") - F.col("by"))
-                            ).cast("double")
-                        ),
-                        9,
-                    )
-                ),
-                9,
-            ).alias("tour_len")
-        )
-    )
-    best = lens.orderBy("tour_len", "pid").limit(1)
-    avg = lens.agg(F.round(F.avg("tour_len"), 6).alias("mean_tour"))
-    return best.crossJoin(F.broadcast(avg)).select(
-        F.col("pid").alias("best_perm"),
-        F.round("tour_len", 6).alias("best_len"),
-        "mean_tour",
-    )
-
-
-def _tsp_sites_sql() -> str:
-    perm_vals = ", ".join(
-        f"({p}, {s}, {a}, {b})" for p, s, a, b in _tsp_perm_rows()
-    )
-    kc = _kcenter_coreset_sql()
-    # reuse the k-center unrolled CTE chain; strip its WITH and final SELECT
-    body = kc[kc.index("WITH ") + 5 : kc.rindex("SELECT * FROM s1")].rstrip()
-    body = body.rstrip()
-    if body.endswith(","):
-        body = body[:-1]
-    unions = " UNION ALL ".join(
-        f"SELECT {i} AS rank, ix, iy FROM s{i}"
-        for i in range(1, _KCENTER_K + 1)
-    )
-    return f"""
-        WITH {body},
-        sites AS ({unions}),
-        legs(pid, seq, ra, rb) AS (VALUES {perm_vals}),
-        lens AS (
-            SELECT pid,
-                   ROUND(SUM(ROUND(SQRT(CAST((a.ix - b.ix) * (a.ix - b.ix)
-                                        + (a.iy - b.iy) * (a.iy - b.iy)
-                                        AS DOUBLE)), 9)), 9) AS tour_len
-            FROM legs
-            JOIN sites a ON legs.ra = a.rank
-            JOIN sites b ON legs.rb = b.rank
-            GROUP BY pid),
-        best AS (SELECT * FROM lens ORDER BY tour_len, pid LIMIT 1),
-        avg AS (SELECT ROUND(AVG(tour_len), 6) AS mean_tour FROM lens)
-        SELECT pid AS best_perm,
-               ROUND(tour_len, 6) AS best_len,
-               mean_tour
-        FROM best CROSS JOIN avg
-    """
-
-
-def q_log_loss_eval(spark, sf_dir):
-    """Cross-entropy (log loss) of the hour-of-day purchase forecast —
-    the strictly-proper companion to `brier_decomposition` on the
-    SAME even/odd-day split (Brier is bounded; log loss punishes
-    confident misses without bound): p̂ clipped to [1/(n_h+2),
-    1−1/(n_h+2)] by LAPLACE smoothing (exact-ratio forecasts, so
-    ln(0) cannot occur by construction), LL = −Σ[c ln p̂ + (n−c)
-    ln(1−p̂)]/N with 9-dp ln terms. One row (n_test, log_loss,
-    baseline_ll at the pooled rate).
-
-    Scale shape: two (hour) aggs + a 24-row broadcast join."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.hour("ts").alias("h"),
-        (F.dayofmonth("ts") % 2 == 0).alias("is_train"),
-        (F.col("event_type") == "purchase").cast("long").alias("y"),
-    )
-    fc = (
-        ev.filter("is_train")
-        .groupBy("h")
-        .agg(
-            F.round(
-                (F.sum("y") + 1) / (F.count(F.lit(1)) + 2).cast("double"),
-                9,
-            ).alias("p_hat")
-        )
-    )
-    test = ev.filter(~F.col("is_train")).groupBy("h").agg(
-        F.count(F.lit(1)).alias("nk"), F.sum("y").alias("ck")
-    )
-    tot = test.agg(
-        F.sum("nk").alias("n"),
-        F.round(
-            (F.sum("ck") + 1) / (F.sum("nk") + 2).cast("double"), 9
-        ).alias("p_pool"),
-    )
-    j = test.join(F.broadcast(fc), "h").crossJoin(F.broadcast(tot))
-    ll_t = F.round(
-        -(
-            F.col("ck") * F.log(F.col("p_hat"))
-            + (F.col("nk") - F.col("ck")) * F.log(1.0 - F.col("p_hat"))
-        ),
-        9,
-    )
-    bl_t = F.round(
-        -(
-            F.col("ck") * F.log(F.col("p_pool"))
-            + (F.col("nk") - F.col("ck")) * F.log(1.0 - F.col("p_pool"))
-        ),
-        9,
-    )
-    agg = j.groupBy("n").agg(
-        F.sum(ll_t).alias("s"), F.sum(bl_t).alias("bs")
-    )
-    return agg.select(
-        F.col("n").alias("n_test"),
-        F.round(F.col("s") / F.col("n"), 6).alias("log_loss"),
-        F.round(F.col("bs") / F.col("n"), 6).alias("baseline_ll"),
-    )
-
-
-def _log_loss_eval_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT hour(ts) AS h,
-                   dayofmonth(ts) % 2 = 0 AS is_train,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y
-            FROM events),
-        fc AS (
-            SELECT h,
-                   ROUND((SUM(y) + 1) / CAST(COUNT(*) + 2 AS DOUBLE), 9)
-                       AS p_hat
-            FROM ev WHERE is_train GROUP BY h),
-        test AS (
-            SELECT h, CAST(COUNT(*) AS BIGINT) AS nk,
-                   CAST(SUM(y) AS BIGINT) AS ck
-            FROM ev WHERE NOT is_train GROUP BY h),
-        tot AS (SELECT CAST(SUM(nk) AS BIGINT) AS n,
-                       ROUND((SUM(ck) + 1)
-                             / CAST(SUM(nk) + 2 AS DOUBLE), 9) AS p_pool
-                FROM test),
-        terms AS (
-            SELECT n,
-                   ROUND(-(ck * LN(p_hat)
-                           + (nk - ck) * LN(1.0 - p_hat)), 9) AS ll_t,
-                   ROUND(-(ck * LN(p_pool)
-                           + (nk - ck) * LN(1.0 - p_pool)), 9) AS bl_t
-            FROM test JOIN fc USING (h) CROSS JOIN tot)
-        SELECT n AS n_test,
-               ROUND(SUM(ll_t) / n, 6) AS log_loss,
-               ROUND(SUM(bl_t) / n, 6) AS baseline_ll
-        FROM terms GROUP BY n
-    """
-
-
-# ---------------------------------------------------------------------------
-# Welch t, Weibull PPCC, madogram, Bhattacharyya (session 14)
-# ---------------------------------------------------------------------------
-
-
-def q_welch_t(spark, sf_dir):
-    """Welch's unequal-variance t-test of weekend vs weekday transaction
-    values, with Cohen's d and the variance F-ratio beside it — the
-    parametric baseline the rank family (`anderson_darling`,
-    `ks_two_sample`) is judged against: group moments are exact
-    integer-cent BIGINTs, t, the Welch-Satterthwaite df, d, and F are
-    one shared float tail. One row.
-
-    Scale shape: a single two-group moment agg — one pass."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-        F.dayofweek("ts").isin(1, 7).cast("long").alias("wkd"),
-    )
-    m = ev.groupBy("wkd").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("v").alias("s"),
-        F.sum(F.col("v").cast("double") * F.col("v")).alias("ss"),
-    )
-    wide = (
-        m.groupBy()
-        .pivot("wkd", [0, 1])
-        .agg(F.first("n").alias("n"), F.first("s").alias("s"),
-             F.first("ss").alias("ss"))
-    )
-    n0, s0, ss0 = F.col("0_n"), F.col("0_s"), F.col("0_ss")
-    n1, s1, ss1 = F.col("1_n"), F.col("1_s"), F.col("1_ss")
-    m0 = s0 / (100.0 * n0)
-    m1 = s1 / (100.0 * n1)
-    v0 = (ss0 / 10000.0 - s0.cast("double") * s0 / (10000.0 * n0)) / (
-        n0 - 1
-    )
-    v1 = (ss1 / 10000.0 - s1.cast("double") * s1 / (10000.0 * n1)) / (
-        n1 - 1
-    )
-    se2 = v0 / n0 + v1 / n1
-    t = (m1 - m0) / F.sqrt(se2)
-    df = se2 * se2 / (
-        (v0 / n0) * (v0 / n0) / (n0 - 1)
-        + (v1 / n1) * (v1 / n1) / (n1 - 1)
-    )
-    sp = F.sqrt(((n0 - 1) * v0 + (n1 - 1) * v1) / (n0 + n1 - 2))
-    return wide.select(
-        n0.alias("n_weekday"),
-        n1.alias("n_weekend"),
-        F.round(m0, 6).alias("mean_weekday"),
-        F.round(m1, 6).alias("mean_weekend"),
-        F.round(t, 6).alias("welch_t"),
-        F.round(df, 6).alias("welch_df"),
-        F.round((m1 - m0) / sp, 6).alias("cohens_d"),
-        F.round(v1 / v0, 6).alias("f_ratio"),
-    )
-
-
-def _welch_t_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT CAST(ROUND(value * 100) AS BIGINT) AS v,
-                   CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
-                       AS wkd
-            FROM events),
-        m AS (
-            SELECT wkd, CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(v) AS BIGINT) AS s,
-                   SUM(CAST(v AS DOUBLE) * v) AS ss
-            FROM ev GROUP BY wkd),
-        wide AS (
-            SELECT MAX(CASE WHEN wkd = 0 THEN n END) AS n0,
-                   MAX(CASE WHEN wkd = 0 THEN s END) AS s0,
-                   MAX(CASE WHEN wkd = 0 THEN ss END) AS ss0,
-                   MAX(CASE WHEN wkd = 1 THEN n END) AS n1,
-                   MAX(CASE WHEN wkd = 1 THEN s END) AS s1,
-                   MAX(CASE WHEN wkd = 1 THEN ss END) AS ss1
-            FROM m),
-        tail AS (
-            SELECT n0, n1,
-                   s0 / (100.0 * n0) AS m0,
-                   s1 / (100.0 * n1) AS m1,
-                   (ss0 / 10000.0
-                    - CAST(s0 AS DOUBLE) * s0 / (10000.0 * n0))
-                   / (n0 - 1) AS v0,
-                   (ss1 / 10000.0
-                    - CAST(s1 AS DOUBLE) * s1 / (10000.0 * n1))
-                   / (n1 - 1) AS v1
-            FROM wide)
-        SELECT n0 AS n_weekday, n1 AS n_weekend,
-               ROUND(m0, 6) AS mean_weekday,
-               ROUND(m1, 6) AS mean_weekend,
-               ROUND((m1 - m0) / SQRT(v0 / n0 + v1 / n1), 6) AS welch_t,
-               ROUND((v0 / n0 + v1 / n1) * (v0 / n0 + v1 / n1)
-                     / ((v0 / n0) * (v0 / n0) / (n0 - 1)
-                        + (v1 / n1) * (v1 / n1) / (n1 - 1)), 6)
-                   AS welch_df,
-               ROUND((m1 - m0)
-                     / SQRT(((n0 - 1) * v0 + (n1 - 1) * v1)
-                            / (n0 + n1 - 2)), 6) AS cohens_d,
-               ROUND(v1 / v0, 6) AS f_ratio
-        FROM tail
-    """
-
-
-def q_ppcc_weibull(spark, sf_dir):
-    """Weibull probability-plot correlation of inter-event gaps — the
-    two-parameter shape family beside `ppcc_expon` (exponential = the
-    Weibull k=1 slice; comparing the two PPCCs says whether burst
-    structure needs the extra shape parameter): r between ln g_(i)
-    and ln(−ln(1 − (i−0.5)/n)) over positive gaps; the plot slope
-    estimates 1/k. One row (n, ppcc_r, shape_k).
-
-    Scale shape: identical to ppcc_expon — one rank window + scalar
-    moments."""
-    from pyspark.sql import Window
-
-    ev = _read(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gaps = (
-        ev.select(ts_us.alias("t0"), F.lead(ts_us).over(w).alias("t1"))
-        .filter(F.col("t1").isNotNull())
-        .select(
-            F.floor((F.col("t1") - F.col("t0")) / F.lit(1_000_000)).alias(
-                "g"
-            )
-        )
-        .filter(F.col("g") > 0)
-    )
-    # two-phase global rank (see ppcc_expon): per-gap-value buckets, never
-    # an O(rows) single-partition window; tie permutations cancel.
-    tot = gaps.agg(F.count(F.lit(1)).alias("n"))
-    ranked = _two_phase_row_number(
-        gaps, F.col("g"), [F.col("g")], out="i"
-    ).crossJoin(F.broadcast(tot))
-    x = F.round(F.log(F.col("g").cast("double")), 9)
-    y = F.round(
-        F.log(
-            -F.log(1.0 - (F.col("i") - 0.5) / F.col("n").cast("double"))
-        ),
-        9,
-    )
-    mom = ranked.select("n", x.alias("x"), y.alias("y")).agg(
-        F.max("n").alias("n"),
-        F.round(F.sum("x"), 9).alias("sx"),
-        F.round(F.sum("y"), 9).alias("sy"),
-        F.round(F.sum(F.col("x") * F.col("x")), 9).alias("sxx"),
-        F.round(F.sum(F.col("x") * F.col("y")), 9).alias("sxy"),
-        F.round(F.sum(F.col("y") * F.col("y")), 9).alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    cxy = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    cxx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    cyy = n * F.col("syy") - F.col("sy") * F.col("sy")
-    return mom.select(
-        "n",
-        F.round(cxy / F.sqrt(cxx * cyy), 6).alias("ppcc_r"),
-        F.round(cxy / cxx, 6).alias("shape_k"),
-    )
-
-
-def _ppcc_weibull_sql() -> str:
-    return """
-        WITH gaps AS (
-            SELECT g FROM (
-                SELECT CAST(FLOOR((t1 - t0) / 1000000) AS BIGINT) AS g
-                FROM (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS t0,
-                             LEAD(epoch_us(CAST(ts AS TIMESTAMP)))
-                                 OVER (PARTITION BY user_id
-                                       ORDER BY ts, event_id) AS t1
-                      FROM events)
-                WHERE t1 IS NOT NULL)
-            WHERE g > 0),
-        tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM gaps),
-        pts AS (
-            SELECT n,
-                   ROUND(LN(CAST(g AS DOUBLE)), 9) AS x,
-                   ROUND(LN(-LN(1.0 - (i - 0.5)
-                                / CAST(n AS DOUBLE))), 9) AS y
-            FROM (SELECT g, ROW_NUMBER() OVER (ORDER BY g) AS i, n
-                  FROM gaps CROSS JOIN tot)),
-        mom AS (
-            SELECT MAX(n) AS n,
-                   ROUND(SUM(x), 9) AS sx, ROUND(SUM(y), 9) AS sy,
-                   ROUND(SUM(x * x), 9) AS sxx,
-                   ROUND(SUM(x * y), 9) AS sxy,
-                   ROUND(SUM(y * y), 9) AS syy
-            FROM pts)
-        SELECT n,
-               ROUND((n * sxy - sx * sy)
-                     / SQRT((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-                   AS ppcc_r,
-               ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6)
-                   AS shape_k
-        FROM mom
-    """
-
-
-def q_madogram(spark, sf_dir):
-    """Madogram γ_M(h) = ½·E|z_i − z_j| of the event-count surface at
-    exact ring lags 1..3 — the ROBUST variogram (first-order
-    differences resist the heavy-tailed cell counts that make
-    `semivariogram`'s squared differences explode under outliers;
-    comparing the two shapes is the standard outlier diagnostic in
-    geostatistics). Cell counts exact BIGINTs, |diff| sums exact; one
-    division per lag row.
-
-    Scale shape: the semivariogram ring-join dataflow — grid-bounded
-    pairs per lag."""
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_col,
-    )
-
-    ev = _read(spark, sf_dir, "events").select("event_id")
-    lat, lng = _latlng_cols(F.col("event_id"))
-    cells = (
-        ev.groupBy(cell_encode_col(lat, lng, 3).alias("cell"))
-        .agg(F.count(F.lit(1)).alias("x"))
-        .localCheckpoint(eager=True)
-    )
-    legs = []
-    for r in (1, 2, 3):
-        ring = [
-            (dx, dy)
-            for dx, dy in _offsets(r)
-            if max(abs(dx), abs(dy)) == r
-        ]
-        nbrs = F.filter(
-            F.array(
-                *[kring_neighbor_col("cell", 3, dx, dy) for dx, dy in ring]
-            ),
-            lambda c: c.isNotNull(),
-        )
-        pairs = cells.select(
-            "cell", "x", F.explode(nbrs).alias("nbr")
-        ).join(
-            cells.select(
-                F.col("cell").alias("nbr"), F.col("x").alias("x2")
-            ),
-            "nbr",
-        )
-        legs.append(
-            pairs.agg(
-                F.count(F.lit(1)).alias("n_pairs"),
-                F.sum(F.abs(F.col("x") - F.col("x2"))).alias("sad"),
-            ).select(
-                F.lit(r).alias("lag"),
-                "n_pairs",
-                F.round(
-                    F.col("sad") / (2.0 * F.col("n_pairs")), 6
-                ).alias("madogram"),
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionAll(leg)
-    return out.orderBy("lag")
-
-
-def _madogram_sql() -> str:
-    from raptor_service_spark.operators.neighborhood import (
-        _offsets,
-        kring_neighbor_sql,
-    )
-
-    lat, lng = _latlng_sql("event_id")
-    cell = cell_encode_sql(lat, lng, 3)
-    nbr = kring_neighbor_sql("c.cell", 3, "o.dx", "o.dy")
-    legs = []
-    for r in (1, 2, 3):
-        ring = [
-            (dx, dy)
-            for dx, dy in _offsets(r)
-            if max(abs(dx), abs(dy)) == r
-        ]
-        offs = ", ".join(f"({dx}, {dy})" for dx, dy in ring)
-        legs.append(f"""
-            SELECT {r} AS lag, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                   ROUND(SUM(ABS(pr.x - c2.x)) / (2.0 * COUNT(*)), 6)
-                       AS madogram
-            FROM (SELECT c.cell, c.x, {nbr} AS nbr
-                  FROM cells c CROSS JOIN (VALUES {offs}) o(dx, dy)
-                  WHERE {nbr} IS NOT NULL) pr
-            JOIN cells c2 ON pr.nbr = c2.cell""")
-    union = " UNION ALL ".join(legs)
-    return f"""
-        WITH cells AS MATERIALIZED (
-            SELECT {cell} AS cell, CAST(COUNT(*) AS BIGINT) AS x
-            FROM events GROUP BY 1)
-        SELECT * FROM ({union}) ORDER BY lag
-    """
-
-
-def q_bhattacharyya_hours(spark, sf_dir):
-    """Bhattacharyya coefficient/distance between the weekend and
-    weekday hour-of-day profiles — the overlap scalar (BC = Σ√(p·q),
-    D_B = −ln BC) beside `jsd_sources` (JSD) and `psi_drift` (PSI):
-    BC is the geometric-mean overlap the others bound but don't
-    equal. Exact count ratios per 24-bin (9-dp), √ and ln tails. One
-    row (bc, d_b, plus both totals).
-
-    Scale shape: one (wkd, hour) agg + a 24-row self-join."""
-    ev = _read(spark, sf_dir, "events").select(
-        F.hour("ts").alias("h"),
-        F.dayofweek("ts").isin(1, 7).cast("long").alias("wkd"),
-    )
-    per = ev.groupBy("h").agg(
-        F.sum("wkd").alias("cw"),
-        F.sum(F.lit(1) - F.col("wkd")).alias("cd"),
-    )
-    tot = per.agg(F.sum("cw").alias("nw"), F.sum("cd").alias("nd"))
-    bc = (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            F.round(
-                F.sqrt(
-                    F.round(F.col("cw") / F.col("nw").cast("double"), 9)
-                    * F.round(F.col("cd") / F.col("nd").cast("double"), 9)
-                ),
-                9,
-            ).alias("t"),
-            "nw",
-            "nd",
-        )
-        .groupBy("nw", "nd")
-        .agg(F.round(F.sum("t"), 9).alias("bc"))
-    )
-    return bc.select(
-        F.col("nw").alias("n_weekend"),
-        F.col("nd").alias("n_weekday"),
-        F.round("bc", 6).alias("bhattacharyya"),
-        F.round(-F.log("bc"), 6).alias("d_b"),
-    )
-
-
-def _bhattacharyya_hours_sql() -> str:
-    return """
-        WITH ev AS (
-            SELECT hour(ts) AS h,
-                   CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
-                       AS wkd
-            FROM events),
-        per AS (
-            SELECT h, CAST(SUM(wkd) AS BIGINT) AS cw,
-                   CAST(SUM(1 - wkd) AS BIGINT) AS cd
-            FROM ev GROUP BY h),
-        tot AS (SELECT CAST(SUM(cw) AS BIGINT) AS nw,
-                       CAST(SUM(cd) AS BIGINT) AS nd
-                FROM per),
-        bc AS (
-            SELECT nw, nd,
-                   ROUND(SUM(ROUND(SQRT(
-                       ROUND(cw / CAST(nw AS DOUBLE), 9)
-                       * ROUND(cd / CAST(nd AS DOUBLE), 9)), 9)), 9) AS bc
-            FROM per CROSS JOIN tot
-            GROUP BY nw, nd)
-        SELECT nw AS n_weekend, nd AS n_weekday,
-               ROUND(bc, 6) AS bhattacharyya,
-               ROUND(-LN(bc), 6) AS d_b
-        FROM bc
-    """
-
-
-# ---------------------------------------------------------------------------
-# multi-model embedding config (session 15)
+# multi-model embedding config
 # ---------------------------------------------------------------------------
 
 _MM_MODELS = ("hash-xof-64", "hash-xof-32")
@@ -39972,7 +4154,7 @@ def _multi_model_dims_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# Gopher / C4 curation rule bundles (session 15)
+# Gopher / C4 curation rule bundles
 # ---------------------------------------------------------------------------
 
 _GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -40358,89 +4540,13 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "s2_containment_join": q_s2_containment_join,
         "tile_histogram": q_tile_histogram,
         "pip_docs": q_pip_docs,
-        "radius_join_docs": q_radius_join_docs,
-        "radius_km_docs": q_radius_km_docs,
-        "bbox_overlap_docs": q_bbox_overlap_docs,
-        "tri_overlap_docs": q_tri_overlap_docs,
-        "events_tile_hourly": q_events_tile_hourly,
         "doc_scrub": q_doc_scrub,
-        "compact_cover": q_compact_cover,
-        "cover_uncompact_roundtrip": q_cover_uncompact_roundtrip,
-        "doc_pairs_within": q_doc_pairs_within,
-        "pip_zonal_stats": q_pip_zonal_stats,
         "bm25_topk": q_bm25_topk,
         "hybrid_retrieval": q_hybrid_retrieval,
-        "user_travel": q_user_travel,
-        "geo_clusters": q_geo_clusters,
-        "geo_dbscan": q_geo_dbscan,
-        "geofence_transitions": q_geofence_transitions,
-        "user_od_flows": q_user_od_flows,
-        "user_stay_points": q_user_stay_points,
-        "traj_cells": q_traj_cells,
-        "hot_cells": q_hot_cells,
         "media_caption_attach": q_media_caption_attach,
-        "tile_topk_docs": q_tile_topk_docs,
-        "cell_coverage_gap": q_cell_coverage_gap,
-        "trending_cells": q_trending_cells,
-        "idw_interpolation": q_idw_interpolation,
-        "cell_boundaries": q_cell_boundaries,
-        "cell_heat_decay": q_cell_heat_decay,
-        "cell_top_terms": q_cell_top_terms,
-        "nearest_doc_assignment": q_nearest_doc_assignment,
-        "user_home_cells": q_user_home_cells,
-        "events_value_histogram": q_events_value_histogram,
-        "cell_value_median": q_cell_value_median,
-        "media_density_per_cell": q_media_density_per_cell,
-        "user_gyration": q_user_gyration,
-        "user_cell_entropy": q_user_cell_entropy,
-        "geo_knn_docs": q_geo_knn_docs,
-        "cell_kring_smooth": q_cell_kring_smooth,
-        "tile_pyramid": q_tile_pyramid,
-        "morans_i": q_morans_i,
-        "getis_hotspots": q_getis_hotspots,
-        "similar_users": q_similar_users,
-        "doc_boilerplate": q_doc_boilerplate,
-        "zorder_layout": q_zorder_layout,
-        "hilbert_layout": q_hilbert_layout,
-        "hex_density": q_hex_density,
-        "geohash_coverage": q_geohash_coverage,
-        "kmeans_geo": q_kmeans_geo,
-        "snap_points": q_snap_points,
-        "cell_sssp": q_cell_sssp,
-        "density_gradient": q_density_gradient,
-        "clark_evans": q_clark_evans,
-        "gravity_fit": q_gravity_fit,
-        "dtw_pairs": q_dtw_pairs,
-        "hausdorff_pairs": q_hausdorff_pairs,
-        "event_funnel": q_event_funnel,
-        "theil_sen_cells": q_theil_sen,
-        "zrange_scan": q_zrange_scan,
-        "kanon_cells": q_kanon_cells,
-        "funnel_stages": q_funnel_stages,
         "seq_packing": q_seq_packing,
-        "hilbert_range_scan": q_hilbert_range_scan,
-        "cohort_retention": q_cohort_retention,
-        "adoption_curve": q_adoption_curve,
         "pip_donut": q_pip_donut,
-        "pmi_bigrams": q_pmi_bigrams,
-        "weighted_sample": q_weighted_sample,
-        "cusum_cells": q_cusum_cells,
-        "user_streaks": q_user_streaks,
-        "benford_values": q_benford_values,
-        "value_correlations": q_value_correlations,
-        "bearing_rose": q_bearing_rose,
-        "cell_isochrone": q_cell_isochrone,
-        "cell_pagerank": q_cell_pagerank,
-        "user_colocation": q_user_colocation,
-        "traj_crossings": q_traj_crossings,
-        "doc_stratified_sample": q_doc_stratified_sample,
-        "user_activity_mask": q_user_activity_mask,
-        "user_hourly_fill": q_user_hourly_fill,
-        "cell_trend_slope": q_cell_trend_slope,
         "doc_dup_substrings": q_doc_dup_substrings,
-        "doc_skyline": q_doc_skyline,
-        "doc_quality_percentile": q_doc_quality_percentile,
-        "cell_covisit": q_cell_covisit,
         # relational battery
         "lineitem_agg": q_lineitem_agg,
         "orders_status_stats": q_orders_status_stats,
@@ -40455,34 +4561,18 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "order_count_per_customer": q_order_count_per_customer,
         "supplier_siblings": q_supplier_siblings,
         "top2_orders_per_customer": q_top2_orders_per_customer,
-        "events_hourly_stats": q_events_hourly_stats,
-        "asof_prior_click": q_asof_prior_click,
-        "click_purchase_join": q_click_purchase_join,
-        "events_rollup": q_events_rollup,
-        "events_pivot": q_events_pivot,
-        "events_sliding": q_events_sliding,
-        "user_running_stats": q_user_running_stats,
         "train_decontam": q_train_decontam,
         "knn_quantized": q_knn_quantized,
         "pq_knn": q_pq_knn,
         "json_props": q_json_props,
         "path_to_root": q_path_to_root,
-        "user_sessions": q_user_sessions,
         "first_seen_dedup": q_first_seen_dedup,
-        "revenue_by_nation": q_revenue_by_nation,
-        "filtered_revenue": q_filtered_revenue,
-        "shipping_priority": q_shipping_priority,
         "price_bucket_range_join": q_price_bucket_range_join,
         "scalar_funcs": q_scalar_funcs,
-        "doc_winnow_fp": q_doc_winnow_fp,
-        "doc_token_stats": q_doc_token_stats,
-        "events_quantiles": q_events_quantiles,
-        "query_normalize": q_query_normalize,
         "event_type_setops": q_event_type_setops,
         # text analysis + dedup + similarity
         "doc_tokens_by_lang": q_doc_tokens_by_lang,
         "doc_hash_split": q_doc_hash_split,
-        "top_terms_per_lang": q_top_terms_per_lang,
         "doc_quality_top20": q_doc_quality_top20,
         "doc_langid_counts": q_doc_langid_counts,
         "doc_fingerprint_dedup": q_doc_fingerprint_dedup,
@@ -40498,344 +4588,21 @@ def _queries_base() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spans_explode": q_spans_explode,
         "span_dedup": q_span_dedup,
         "curation_pipeline": q_curation_pipeline,
-        "local_moran": q_local_moran,
         "mmr_retrieval": q_mmr_retrieval,
-        "od_triangles": q_od_triangles,
-        "snm_pairs": q_snm_pairs,
-        "fuzzy_title_pairs": q_fuzzy_title_pairs,
-        "doc_tfidf_terms": q_doc_tfidf_terms,
-        "join_counts": q_join_counts,
-        "cell_kcore": q_cell_kcore,
-        "speed_anomalies": q_speed_anomalies,
-        "spacetime_scan": q_spacetime_scan,
-        "quadtree_bins": q_quadtree_bins,
-        "gearys_c": q_gearys_c,
         "zipf_slope": q_zipf_slope,
         "source_delta": q_source_delta,
-        "colocation_quotient": q_colocation_quotient,
-        "heaps_law": q_heaps_law,
-        "cluster_hulls": q_cluster_hulls,
-        "g_function": q_g_function,
         "doc_bigram_ppl": q_doc_bigram_ppl,
         "bpe_merges": q_bpe_merges,
-        "teleport_flags": q_teleport_flags,
-        "huff_demand": q_huff_demand,
-        "quadrat_csr": q_quadrat_csr,
-        "cross_k": q_cross_k,
-        "deviational_ellipse": q_deviational_ellipse,
-        "knox_test": q_knox_test,
-        "span_transitions": q_span_transitions,
-        "doc_char_entropy": q_doc_char_entropy,
-        "cell_markov": q_cell_markov,
-        "user_burstiness": q_user_burstiness,
-        "cell_gini": q_cell_gini,
-        "hourly_acf": q_hourly_acf,
-        "mixture_resample": q_mixture_resample,
-        "dsir_weights": q_dsir_weights,
-        "viterbi_match": q_viterbi_match,
-        "rendezvous_shards": q_rendezvous_shards,
         "pip_polygon_table": q_pip_polygon_table,
-        "pca_top_component": q_pca_top_component,
-        "cotravel_pairs": q_cotravel_pairs,
-        "contact_reach": q_contact_reach,
-        "semivariogram": q_semivariogram,
-        "variogram_fit": q_variogram_fit,
-        "od_ipf_balance": q_od_ipf_balance,
-        "kmv_distinct": q_kmv_distinct,
-        "bloom_semi_join": q_bloom_semi_join,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "histogram_quantiles": q_histogram_quantiles,
-        "matryoshka_recall": q_matryoshka_recall,
         "bpe_encode": q_bpe_encode,
-        "kmv_set_ops": q_kmv_set_ops,
-        "binary_quant_recall": q_binary_quant_recall,
-        "psi_drift": q_psi_drift,
-        "ks_two_sample": q_ks_two_sample,
-        "fellegi_sunter": q_fellegi_sunter,
-        "cell_seasonal": q_cell_seasonal,
-        "radiation_model": q_radiation_model,
-        "ab_proportions": q_ab_proportions,
-        "fdr_hotspots": q_fdr_hotspots,
-        "ewma_anomaly": q_ewma_anomaly,
-        "prf_expansion": q_prf_expansion,
-        "commute_flows": q_commute_flows,
-        "chaikin_smooth": q_chaikin_smooth,
         "media_ahash_dedup": q_media_ahash_dedup,
-        "rbo_rankings": q_rbo_rankings,
-        "kaplan_meier": q_kaplan_meier,
-        "did_estimator": q_did_estimator,
-        "dp_cell_counts": q_dp_cell_counts,
-        "join_size_estimate": q_join_size_estimate,
-        "crosstrack_deviation": q_crosstrack_deviation,
-        "shapley_attribution": q_shapley_attribution,
-        "ql_dirichlet": q_ql_dirichlet,
-        "ndcg_bm25": q_ndcg_bm25,
-        "mann_whitney": q_mann_whitney,
-        "bm25_eval": q_bm25_eval,
-        "chi2_independence": q_chi2_independence,
-        "cuped_adjustment": q_cuped_adjustment,
-        "containment_pairs": q_containment_pairs,
-        "clustering_coeff": q_clustering_coeff,
-        "hits_scores": q_hits_scores,
-        "rocchio_feedback": q_rocchio_feedback,
         "cdc_chunks": q_cdc_chunks,
-        "degree_assortativity": q_degree_assortativity,
-        "cell_modularity": q_cell_modularity,
-        "link_prediction": q_link_prediction,
-        "jsd_sources": q_jsd_sources,
-        "polygon_metrics": q_polygon_metrics,
-        "kn_bigram_lm": q_kn_bigram_lm,
-        "hll_distinct": q_hll_distinct,
-        "textrank_keywords": q_textrank_keywords,
-        "ppr_scores": q_ppr_scores,
-        "lpa_communities": q_lpa_communities,
         "nb_langid": q_nb_langid,
-        "silhouette_kmeans": q_silhouette_kmeans,
-        "symspell_lookup": q_symspell_lookup,
-        "logreg_train": q_logreg_train,
-        "moran_correlogram": q_moran_correlogram,
-        "monge_elkan_pairs": q_monge_elkan_pairs,
         "media_scene_cuts": q_media_scene_cuts,
-        "permutation_test": q_permutation_test,
-        "maxscore_pruning": q_maxscore_pruning,
-        "minhash_jaccard_audit": q_minhash_jaccard_audit,
-        "markov_attribution": q_markov_attribution,
-        "graph_eccentricity": q_graph_eccentricity,
-        "ldiv_tcloseness": q_ldiv_tcloseness,
-        "semivariogram_dir": q_semivariogram_dir,
-        "cell_xcorr": q_cell_xcorr,
-        "align_titles": q_align_titles,
-        "jl_projection_audit": q_jl_projection_audit,
-        "spherical_centroid": q_spherical_centroid,
-        "mobility_entropy_rate": q_mobility_entropy_rate,
-        "term_burstiness": q_term_burstiness,
-        "participation_index": q_participation_index,
-        "greedy_set_cover": q_greedy_set_cover,
-        "segregation_indices": q_segregation_indices,
-        "percolation_curve": q_percolation_curve,
-        "stl_lite": q_stl_lite,
-        "changepoint_detect": q_changepoint_detect,
-        "ransac_fit": q_ransac_fit,
-        "next_cell_eval": q_next_cell_eval,
-        "span_position_profile": q_span_position_profile,
-        "multiprobe_lsh_recall": q_multiprobe_lsh_recall,
-        "rayleigh_bearing": q_rayleigh_bearing,
-        "bootstrap_ci": q_bootstrap_ci,
-        "pr_curve_11pt": q_pr_curve_11pt,
-        "kalman_tracks": q_kalman_tracks,
-        "holt_trend_cells": q_holt_trend_cells,
         "semdedup_clusters": q_semdedup_clusters,
-        "plsa_topics": q_plsa_topics,
-        "kde_hotspots": q_kde_hotspots,
-        "hard_negatives": q_hard_negatives,
-        "betweenness_cells": q_betweenness_cells,
-        "temporal_motifs": q_temporal_motifs,
-        "clarity_score": q_clarity_score,
-        "rouge_pairs": q_rouge_pairs,
-        "cell_ktruss": q_cell_ktruss,
-        "good_turing": q_good_turing,
-        "chao1_richness": q_chao1_richness,
-        "wilson_ctr": q_wilson_ctr,
-        "sprt_monitor": q_sprt_monitor,
-        "ppr_sweep_cut": q_ppr_sweep_cut,
-        "rich_club": q_rich_club,
-        "randomized_response": q_randomized_response,
-        "bivariate_moran": q_bivariate_moran,
-        "kriging_ordinary": q_kriging_ordinary,
-        "f_function": q_f_function,
-        "rake_keywords": q_rake_keywords,
-        "conformal_intervals": q_conformal_intervals,
-        "isotonic_hourly": q_isotonic_hourly,
         "media_dhash_pairs": q_media_dhash_pairs,
-        "texttiling_boundaries": q_texttiling_boundaries,
-        "traj_sinuosity": q_traj_sinuosity,
-        "lee_l": q_lee_l,
-        "calibration_bins": q_calibration_bins,
-        "mst_cells": q_mst_cells,
-        "mad_outliers": q_mad_outliers,
-        "theil_decomposition": q_theil_decomposition,
-        "jump_length_fit": q_jump_length_fit,
-        "cell_segmentation": q_cell_segmentation,
-        "dbsf_fusion": q_dbsf_fusion,
-        "best_passage": q_best_passage,
-        "idw_loocv": q_idw_loocv,
-        "contour_cases": q_contour_cases,
-        "region_bboxes": q_region_bboxes,
-        "blocking_quality": q_blocking_quality,
-        "decision_stump": q_decision_stump,
-        "ot_transport_plan": q_ot_transport_plan,
-        "media_run_lengths": q_media_run_lengths,
-        "lru_hit_rate": q_lru_hit_rate,
-        "phrase_search": q_phrase_search,
-        "min_cover_window": q_min_cover_window,
-        "lcss_pairs": q_lcss_pairs,
-        "readability_scores": q_readability_scores,
-        "box_counting_dim": q_box_counting_dim,
-        "spearman_corr": q_spearman_corr,
-        "rnn_influence": q_rnn_influence,
-        "boosted_stumps": q_boosted_stumps,
-        "gmm_em_values": q_gmm_em_values,
-        "meeting_point": q_meeting_point,
-        "od_segment_raster": q_od_segment_raster,
-        "viewshed_cells": q_viewshed_cells,
-        "sfca_accessibility": q_sfca_accessibility,
-        "spacetime_prism": q_spacetime_prism,
-        "lof_outliers": q_lof_outliers,
-        "gwr_cells": q_gwr_cells,
-        "dasymetric_realloc": q_dasymetric_realloc,
-        "modularity_score": q_modularity_score,
-        "ridge_regression": q_ridge_regression,
-        "llr_bigrams": q_llr_bigrams,
-        "d8_flow_dirs": q_d8_flow_dirs,
-        "nearest_centroid_eval": q_nearest_centroid_eval,
-        "flow_accumulation": q_flow_accumulation,
-        "watershed_basins": q_watershed_basins,
-        "katz_centrality": q_katz_centrality,
-        "mobility_motifs": q_mobility_motifs,
-        "jw_title_pairs": q_jw_title_pairs,
-        "cochran_armitage": q_cochran_armitage,
-        "simrank_pairs": q_simrank_pairs,
-        "gesd_outliers": q_gesd_outliers,
-        "damerau_title_pairs": q_damerau_title_pairs,
-        "majority_automaton": q_majority_automaton,
-        "poisson_irls": q_poisson_irls,
-        "st_dbscan": q_st_dbscan,
-        "hough_lines": q_hough_lines,
-        "apriori_rules": q_apriori_rules,
-        "median_polish": q_median_polish,
-        "curve_locality_audit": q_curve_locality_audit,
-        "cox_ph": q_cox_ph,
-        "markov_surprise": q_markov_surprise,
-        "rank_aggregation": q_rank_aggregation,
-        "rbp_eval": q_rbp_eval,
-        "logrank_test": q_logrank_test,
-        "effective_mesh": q_effective_mesh,
-        "harmonic_centrality": q_harmonic_centrality,
         "media_phash_pairs": q_media_phash_pairs,
-        "hill_diversity": q_hill_diversity,
-        "adjusted_rand": q_adjusted_rand,
-        "croston_cells": q_croston_cells,
-        "capture_recapture": q_capture_recapture,
-        "huber_irls": q_huber_irls,
-        "general_g": q_general_g,
-        "matrix_profile": q_matrix_profile,
-        "domain_shift_ppl": q_domain_shift_ppl,
-        "propensity_ate": q_propensity_ate,
-        "design_effect": q_design_effect,
-        "gpd_tail": q_gpd_tail,
-        "seq_patterns": q_seq_patterns,
-        "pair_correlation": q_pair_correlation,
-        "abc_analysis": q_abc_analysis,
-        "bm25f_topk": q_bm25f_topk,
-        "polygon_polyfill": q_polygon_polyfill,
-        "trimmed_means": q_trimmed_means,
-        "nelson_aalen": q_nelson_aalen,
-        "power_analysis": q_power_analysis,
-        "raster_crosstab": q_raster_crosstab,
-        "focal_mode": q_focal_mode,
-        "cost_allocation": q_cost_allocation,
-        "ruggedness_index": q_ruggedness_index,
-        "ucb_replay": q_ucb_replay,
-        "shape_compactness": q_shape_compactness,
-        "recurrence_quant": q_recurrence_quant,
-        "allan_variance": q_allan_variance,
-        "regression_influence": q_regression_influence,
-        "block_entropy": q_block_entropy,
-        "dyad_census": q_dyad_census,
-        "fano_factor": q_fano_factor,
-        "kendall_tau": q_kendall_tau,
-        "competing_risks": q_competing_risks,
-        "rfm_segments": q_rfm_segments,
-        "cross_variogram": q_cross_variogram,
-        "skew_report": q_skew_report,
-        "leaderboard_churn": q_leaderboard_churn,
-        "week_overlap": q_week_overlap,
-        "friendship_paradox": q_friendship_paradox,
-        "emd_values": q_emd_values,
-        "peak_prominence": q_peak_prominence,
-        "conversion_lag_quantiles": q_conversion_lag_quantiles,
-        "stkde_hotspots": q_stkde_hotspots,
-        "flow_asymmetry": q_flow_asymmetry,
-        "runs_test": q_runs_test,
-        "goertzel_power": q_goertzel_power,
-        "mann_kendall": q_mann_kendall,
-        "roc_auc": q_roc_auc,
-        "cohen_kappa": q_cohen_kappa,
-        "mcnemar": q_mcnemar,
-        "transfer_entropy": q_transfer_entropy,
-        "granger_causality": q_granger_causality,
-        "permutation_entropy": q_permutation_entropy,
-        "sample_entropy": q_sample_entropy,
-        "hurst_rs": q_hurst_rs,
-        "visibility_graph": q_visibility_graph,
-        "page_hinkley": q_page_hinkley,
-        "elo_replay": q_elo_replay,
-        "kcenter_coreset": q_kcenter_coreset,
-        "topsis_sites": q_topsis_sites,
-        "hmm_forward": q_hmm_forward,
-        "g_test": q_g_test,
-        "rmst": q_rmst,
-        "odds_ratio": q_odds_ratio,
-        "siegel_slopes": q_siegel_slopes,
-        "hopkins_statistic": q_hopkins_statistic,
-        "local_geary": q_local_geary,
-        "item_item_cf": q_item_item_cf,
-        "line_clipping": q_line_clipping,
-        "soundex_blocking": q_soundex_blocking,
-        "maup_audit": q_maup_audit,
-        "variance_partition": q_variance_partition,
-        "knn_regression_cells": q_knn_regression_cells,
-        "beta_binomial_ctr": q_beta_binomial_ctr,
-        "burrows_delta": q_burrows_delta,
-        "beta_diversity": q_beta_diversity,
-        "yule_k": q_yule_k,
-        "contagion_index": q_contagion_index,
-        "yokoi_connectivity": q_yokoi_connectivity,
-        "binary_morphology": q_binary_morphology,
-        "lacunarity": q_lacunarity,
-        "jenks_breaks": q_jenks_breaks,
-        "von_mises_hours": q_von_mises_hours,
-        "ljung_box": q_ljung_box,
-        "burt_constraint": q_burt_constraint,
-        "mark_correlation": q_mark_correlation,
-        "brier_decomposition": q_brier_decomposition,
-        "theils_u2": q_theils_u2,
-        "morisita_index": q_morisita_index,
-        "xicor": q_xicor,
-        "crps_eval": q_crps_eval,
-        "pinball_loss": q_pinball_loss,
-        "kuiper_test": q_kuiper_test,
-        "knapsack_sites": q_knapsack_sites,
-        "anderson_darling": q_anderson_darling,
-        "broken_stick": q_broken_stick,
-        "ppcc_expon": q_ppcc_expon,
-        "turning_points": q_turning_points,
-        "skyline_sites": q_skyline_sites,
-        "shapley_coverage": q_shapley_coverage,
-        "dea_efficiency": q_dea_efficiency,
-        "qn_scale": q_qn_scale,
-        "taylors_law": q_taylors_law,
-        "simpsons_paradox": q_simpsons_paradox,
-        "partial_correlation": q_partial_correlation,
-        "growth_accounting": q_growth_accounting,
-        "harrell_c": q_harrell_c,
-        "gumbel_maxima": q_gumbel_maxima,
-        "tsp_sites": q_tsp_sites,
-        "log_loss_eval": q_log_loss_eval,
-        "welch_t": q_welch_t,
-        "ppcc_weibull": q_ppcc_weibull,
-        "madogram": q_madogram,
-        "bhattacharyya_hours": q_bhattacharyya_hours,
-        "james_stein": q_james_stein,
-        "atkinson_index": q_atkinson_index,
-        "bradley_terry": q_bradley_terry,
-        "spatial_markov": q_spatial_markov,
-        "interarrival_fit": q_interarrival_fit,
         "doc_perplexity": q_doc_perplexity,
-        "trajectory_simplify": q_trajectory_simplify,
-        "quadkey_tiles": q_quadkey_tiles,
-        "ripley_k": q_ripley_k,
-        "emerging_hotspots": q_emerging_hotspots,
         # engine-native (rows-only driver check; pytest covers semantics)
         "simhash_pairs": q_simhash_pairs,
         "cosine_neardup_lsh": q_cosine_neardup_lsh,
@@ -40881,429 +4648,30 @@ def oracle_sql() -> dict[str, str]:
             f"FROM documents GROUP BY 1"
         ),
         "pip_docs": f"{tri_sql} UNION ALL {rect_sql}",
-        "radius_join_docs": _radius_join_docs_sql(),
-        "radius_km_docs": _radius_km_docs_sql(),
-        "bbox_overlap_docs": _bbox_overlap_docs_sql(),
-        "tri_overlap_docs": _tri_overlap_docs_sql(),
-        "events_tile_hourly": _events_tile_hourly_sql(),
         "doc_scrub": _doc_scrub_sql(),
-        "compact_cover": _compact_cover_sql(),
-        "cover_uncompact_roundtrip": _cover_uncompact_roundtrip_sql(),
-        "doc_pairs_within": _doc_pairs_within_sql(),
-        "pip_zonal_stats": _pip_zonal_stats_sql(),
         "bm25_topk": _bm25_sql_entry(10),
         "hybrid_retrieval": _hybrid_retrieval_sql(),
-        "user_travel": _user_travel_sql(),
-        "geo_clusters": _geo_clusters_sql(),
-        "geo_dbscan": _geo_dbscan_sql(),
-        "geofence_transitions": _geofence_transitions_sql(),
-        "user_od_flows": _user_od_flows_sql(),
-        "user_stay_points": _user_stay_points_sql(),
-        "traj_cells": _traj_cells_sql(),
-        "hot_cells": _hot_cells_sql(),
         "media_caption_attach": _media_caption_attach_sql(),
-        "tile_topk_docs": _tile_topk_docs_sql(),
-        "cell_coverage_gap": _cell_coverage_gap_sql(),
-        "trending_cells": _trending_cells_sql(),
-        "idw_interpolation": _idw_interpolation_sql(),
-        "cell_boundaries": _cell_boundaries_sql(),
-        "cell_heat_decay": _cell_heat_decay_sql(),
-        "cell_top_terms": _cell_top_terms_sql(),
-        "nearest_doc_assignment": _nearest_doc_assignment_sql(),
-        "user_home_cells": _user_home_cells_sql(),
-        "events_value_histogram": _events_value_histogram_sql(),
-        "cell_value_median": _cell_value_median_sql(),
-        "media_density_per_cell": _media_density_per_cell_sql(),
-        "user_gyration": _user_gyration_sql(),
-        "user_cell_entropy": _user_cell_entropy_sql(),
-        "geo_knn_docs": _geo_knn_docs_sql(),
-        "cell_kring_smooth": _cell_kring_smooth_sql(),
-        "tile_pyramid": _tile_pyramid_sql(),
-        "morans_i": _morans_i_sql(),
-        "getis_hotspots": _getis_hotspots_sql(),
         "span_dedup": _span_dedup_sql(),
         "curation_pipeline": _curation_pipeline_sql(),
-        "local_moran": _local_moran_sql(),
         "mmr_retrieval": _mmr_retrieval_sql(),
-        "od_triangles": _od_triangles_sql(),
-        "snm_pairs": _snm_pairs_sql(),
-        "fuzzy_title_pairs": _fuzzy_title_pairs_sql(),
-        "doc_tfidf_terms": _doc_tfidf_terms_sql(),
-        "join_counts": _join_counts_sql(),
-        "cell_kcore": _cell_kcore_sql(),
-        "speed_anomalies": _speed_anomalies_sql(),
-        "spacetime_scan": _spacetime_scan_sql(),
-        "quadtree_bins": _quadtree_bins_sql(),
-        "gearys_c": _gearys_c_sql(),
         "zipf_slope": _zipf_slope_sql(),
         "source_delta": _source_delta_sql(),
-        "colocation_quotient": _colocation_quotient_sql(),
-        "heaps_law": _heaps_law_sql(),
-        "cluster_hulls": _cluster_hulls_sql(),
-        "g_function": _g_function_sql(),
         "doc_bigram_ppl": _doc_bigram_ppl_sql(),
         "bpe_merges": _bpe_merges_sql(),
-        "teleport_flags": _teleport_flags_sql(),
-        "huff_demand": _huff_demand_sql(),
-        "quadrat_csr": _quadrat_csr_sql(),
-        "cross_k": _cross_k_sql(),
-        "deviational_ellipse": _deviational_ellipse_sql(),
-        "knox_test": _knox_test_sql(),
-        "span_transitions": _span_transitions_sql(),
-        "doc_char_entropy": _doc_char_entropy_sql(),
-        "cell_markov": _cell_markov_sql(),
-        "user_burstiness": _user_burstiness_sql(),
-        "cell_gini": _cell_gini_sql(),
-        "hourly_acf": _hourly_acf_sql(),
-        "mixture_resample": _mixture_resample_sql(),
-        "dsir_weights": _dsir_weights_sql(),
-        "viterbi_match": _viterbi_match_sql(),
-        "rendezvous_shards": _rendezvous_shards_sql(),
         "pip_polygon_table": _pip_polygon_table_sql(),
-        "pca_top_component": _pca_top_component_sql(),
-        "cotravel_pairs": _cotravel_pairs_sql(),
-        "contact_reach": _contact_reach_sql(),
-        "semivariogram": _semivariogram_sql(),
-        "variogram_fit": _variogram_fit_sql(),
-        "od_ipf_balance": _od_ipf_balance_sql(),
-        "kmv_distinct": _kmv_distinct_sql(),
-        "bloom_semi_join": _bloom_semi_join_sql(),
-        "cms_heavy_hitters": _cms_heavy_hitters_sql(),
-        "histogram_quantiles": _histogram_quantiles_sql(),
-        "matryoshka_recall": _matryoshka_recall_sql(),
         "bpe_encode": _bpe_encode_sql(),
-        "kmv_set_ops": _kmv_set_ops_sql(),
-        "binary_quant_recall": _binary_quant_recall_sql(),
-        "psi_drift": _psi_drift_sql(),
-        "ks_two_sample": _ks_two_sample_sql(),
-        "fellegi_sunter": _fellegi_sunter_sql(),
-        "cell_seasonal": _cell_seasonal_sql(),
-        "radiation_model": _radiation_model_sql(),
-        "ab_proportions": _ab_proportions_sql(),
-        "fdr_hotspots": _fdr_hotspots_sql(),
-        "ewma_anomaly": _ewma_anomaly_sql(),
-        "prf_expansion": _prf_expansion_sql(),
-        "commute_flows": _commute_flows_sql(),
-        "chaikin_smooth": _chaikin_smooth_sql(),
         "media_ahash_dedup": _media_ahash_dedup_sql(),
-        "rbo_rankings": _rbo_rankings_sql(),
-        "kaplan_meier": _kaplan_meier_sql(),
-        "did_estimator": _did_estimator_sql(),
-        "dp_cell_counts": _dp_cell_counts_sql(),
-        "join_size_estimate": _join_size_estimate_sql(),
-        "crosstrack_deviation": _crosstrack_deviation_sql(),
-        "shapley_attribution": _shapley_attribution_sql(),
-        "ql_dirichlet": _ql_dirichlet_sql(),
-        "ndcg_bm25": _ndcg_bm25_sql(),
-        "mann_whitney": _mann_whitney_sql(),
-        "bm25_eval": _bm25_eval_sql(),
-        "chi2_independence": _chi2_independence_sql(),
-        "cuped_adjustment": _cuped_adjustment_sql(),
-        "containment_pairs": _containment_pairs_sql(),
-        "clustering_coeff": _clustering_coeff_sql(),
-        "hits_scores": _hits_scores_sql(),
-        "rocchio_feedback": _rocchio_feedback_sql(),
         "cdc_chunks": _cdc_chunks_sql(),
-        "degree_assortativity": _degree_assortativity_sql(),
-        "cell_modularity": _cell_modularity_sql(),
-        "link_prediction": _link_prediction_sql(),
-        "jsd_sources": _jsd_sources_sql(),
-        "polygon_metrics": _polygon_metrics_sql(),
-        "kn_bigram_lm": _kn_bigram_lm_sql(),
-        "hll_distinct": _hll_distinct_sql(),
-        "textrank_keywords": _textrank_keywords_sql(),
-        "ppr_scores": _ppr_scores_sql(),
-        "lpa_communities": _lpa_communities_sql(),
         "nb_langid": _nb_langid_sql(),
-        "silhouette_kmeans": _silhouette_kmeans_sql(),
-        "symspell_lookup": _symspell_lookup_sql(),
-        "logreg_train": _logreg_train_sql(),
-        "moran_correlogram": _moran_correlogram_sql(),
-        "monge_elkan_pairs": _monge_elkan_pairs_sql(),
         "media_scene_cuts": _media_scene_cuts_sql(),
-        "permutation_test": _permutation_test_sql(),
-        "maxscore_pruning": _maxscore_pruning_sql(),
-        "minhash_jaccard_audit": _minhash_jaccard_audit_sql(),
-        "markov_attribution": _markov_attribution_sql(),
-        "graph_eccentricity": _graph_eccentricity_sql(),
-        "ldiv_tcloseness": _ldiv_tcloseness_sql(),
-        "semivariogram_dir": _semivariogram_dir_sql(),
-        "cell_xcorr": _cell_xcorr_sql(),
-        "align_titles": _align_titles_sql(),
-        "jl_projection_audit": _jl_projection_audit_sql(),
-        "spherical_centroid": _spherical_centroid_sql(),
-        "mobility_entropy_rate": _mobility_entropy_rate_sql(),
-        "term_burstiness": _term_burstiness_sql(),
-        "participation_index": _participation_index_sql(),
-        "greedy_set_cover": _greedy_set_cover_sql(),
-        "segregation_indices": _segregation_indices_sql(),
-        "percolation_curve": _percolation_curve_sql(),
-        "stl_lite": _stl_lite_sql(),
-        "changepoint_detect": _changepoint_detect_sql(),
-        "ransac_fit": _ransac_fit_sql(),
-        "next_cell_eval": _next_cell_eval_sql(),
-        "span_position_profile": _span_position_profile_sql(),
-        "multiprobe_lsh_recall": _multiprobe_lsh_recall_sql(),
-        "rayleigh_bearing": _rayleigh_bearing_sql(),
-        "bootstrap_ci": _bootstrap_ci_sql(),
-        "pr_curve_11pt": _pr_curve_11pt_sql(),
-        "kalman_tracks": _kalman_tracks_sql(),
-        "holt_trend_cells": _holt_trend_cells_sql(),
         "semdedup_clusters": _semdedup_clusters_sql(),
-        "plsa_topics": _plsa_topics_sql(),
-        "kde_hotspots": _kde_hotspots_sql(),
-        "hard_negatives": _hard_negatives_sql(),
-        "betweenness_cells": _betweenness_cells_sql(),
-        "temporal_motifs": _temporal_motifs_sql(),
-        "clarity_score": _clarity_score_sql(),
-        "rouge_pairs": _rouge_pairs_sql(),
-        "cell_ktruss": _cell_ktruss_sql(),
-        "good_turing": _good_turing_sql(),
-        "chao1_richness": _chao1_richness_sql(),
-        "wilson_ctr": _wilson_ctr_sql(),
-        "sprt_monitor": _sprt_monitor_sql(),
-        "ppr_sweep_cut": _ppr_sweep_cut_sql(),
-        "rich_club": _rich_club_sql(),
-        "randomized_response": _randomized_response_sql(),
-        "bivariate_moran": _bivariate_moran_sql(),
-        "kriging_ordinary": _kriging_ordinary_sql(),
-        "f_function": _f_function_sql(),
-        "rake_keywords": _rake_keywords_sql(),
-        "conformal_intervals": _conformal_intervals_sql(),
-        "isotonic_hourly": _isotonic_hourly_sql(),
         "media_dhash_pairs": _media_dhash_pairs_sql(),
-        "texttiling_boundaries": _texttiling_boundaries_sql(),
-        "traj_sinuosity": _traj_sinuosity_sql(),
-        "lee_l": _lee_l_sql(),
-        "calibration_bins": _calibration_bins_sql(),
-        "mst_cells": _mst_cells_sql(),
-        "mad_outliers": _mad_outliers_sql(),
-        "theil_decomposition": _theil_decomposition_sql(),
-        "jump_length_fit": _jump_length_fit_sql(),
-        "cell_segmentation": _cell_segmentation_sql(),
-        "dbsf_fusion": _dbsf_fusion_sql(),
-        "best_passage": _best_passage_sql(),
-        "idw_loocv": _idw_loocv_sql(),
-        "contour_cases": _contour_cases_sql(),
-        "region_bboxes": _region_bboxes_sql(),
-        "blocking_quality": _blocking_quality_sql(),
-        "decision_stump": _decision_stump_sql(),
-        "ot_transport_plan": _ot_transport_plan_sql(),
-        "media_run_lengths": _media_run_lengths_sql(),
-        "lru_hit_rate": _lru_hit_rate_sql(),
-        "phrase_search": _phrase_search_sql(),
-        "min_cover_window": _min_cover_window_sql(),
-        "lcss_pairs": _lcss_pairs_sql(),
-        "readability_scores": _readability_scores_sql(),
-        "box_counting_dim": _box_counting_dim_sql(),
-        "spearman_corr": _spearman_corr_sql(),
-        "gmm_em_values": _gmm_em_values_sql(),
-        "meeting_point": _meeting_point_sql(),
-        "od_segment_raster": _od_segment_raster_sql(),
-        "viewshed_cells": _viewshed_cells_sql(),
-        "sfca_accessibility": _sfca_accessibility_sql(),
-        "spacetime_prism": _spacetime_prism_sql(),
-        "lof_outliers": _lof_outliers_sql(),
-        "gwr_cells": _gwr_cells_sql(),
-        "dasymetric_realloc": _dasymetric_realloc_sql(),
-        "modularity_score": _modularity_score_sql(),
-        "ridge_regression": _ridge_regression_sql(),
-        "llr_bigrams": _llr_bigrams_sql(),
-        "d8_flow_dirs": _d8_flow_dirs_sql(),
-        "nearest_centroid_eval": _nearest_centroid_eval_sql(),
-        "flow_accumulation": _flow_accumulation_sql(),
-        "watershed_basins": _watershed_basins_sql(),
-        "katz_centrality": _katz_centrality_sql(),
-        "mobility_motifs": _mobility_motifs_sql(),
-        "jw_title_pairs": _jw_title_pairs_sql(),
-        "cochran_armitage": _cochran_armitage_sql(),
-        "simrank_pairs": _simrank_pairs_sql(),
-        "gesd_outliers": _gesd_outliers_sql(),
-        "damerau_title_pairs": _damerau_title_pairs_sql(),
-        "majority_automaton": _majority_automaton_sql(),
-        "poisson_irls": _poisson_irls_sql(),
-        "st_dbscan": _st_dbscan_sql(),
-        "hough_lines": _hough_lines_sql(),
-        "apriori_rules": _apriori_rules_sql(),
-        "median_polish": _median_polish_sql(),
-        "curve_locality_audit": _curve_locality_audit_sql(),
-        "cox_ph": _cox_ph_sql(),
-        "markov_surprise": _markov_surprise_sql(),
-        "rank_aggregation": _rank_aggregation_sql(),
-        "rbp_eval": _rbp_eval_sql(),
-        "logrank_test": _logrank_test_sql(),
-        "effective_mesh": _effective_mesh_sql(),
-        "harmonic_centrality": _harmonic_centrality_sql(),
         "media_phash_pairs": _media_phash_pairs_sql(),
-        "hill_diversity": _hill_diversity_sql(),
-        "adjusted_rand": _adjusted_rand_sql(),
-        "croston_cells": _croston_cells_sql(),
-        "capture_recapture": _capture_recapture_sql(),
-        "huber_irls": _huber_irls_sql(),
-        "general_g": _general_g_sql(),
-        "matrix_profile": _matrix_profile_sql(),
-        "domain_shift_ppl": _domain_shift_ppl_sql(),
-        "propensity_ate": _propensity_ate_sql(),
-        "design_effect": _design_effect_sql(),
-        "gpd_tail": _gpd_tail_sql(),
-        "seq_patterns": _seq_patterns_sql(),
-        "pair_correlation": _pair_correlation_sql(),
-        "abc_analysis": _abc_analysis_sql(),
-        "bm25f_topk": _bm25f_topk_sql(),
-        "polygon_polyfill": _polygon_polyfill_sql(),
-        "trimmed_means": _trimmed_means_sql(),
-        "nelson_aalen": _nelson_aalen_sql(),
-        "power_analysis": _power_analysis_sql(),
-        "raster_crosstab": _raster_crosstab_sql(),
-        "focal_mode": _focal_mode_sql(),
-        "cost_allocation": _cost_allocation_sql(),
-        "ruggedness_index": _ruggedness_index_sql(),
-        "ucb_replay": _ucb_replay_sql(),
-        "shape_compactness": _shape_compactness_sql(),
-        "recurrence_quant": _recurrence_quant_sql(),
-        "allan_variance": _allan_variance_sql(),
-        "regression_influence": _regression_influence_sql(),
-        "block_entropy": _block_entropy_sql(),
-        "dyad_census": _dyad_census_sql(),
-        "fano_factor": _fano_factor_sql(),
-        "kendall_tau": _kendall_tau_sql(),
-        "competing_risks": _competing_risks_sql(),
-        "rfm_segments": _rfm_segments_sql(),
-        "cross_variogram": _cross_variogram_sql(),
-        "skew_report": _skew_report_sql(),
-        "leaderboard_churn": _leaderboard_churn_sql(),
-        "week_overlap": _week_overlap_sql(),
-        "friendship_paradox": _friendship_paradox_sql(),
-        "emd_values": _emd_values_sql(),
-        "peak_prominence": _peak_prominence_sql(),
-        "conversion_lag_quantiles": _conversion_lag_quantiles_sql(),
-        "stkde_hotspots": _stkde_hotspots_sql(),
-        "flow_asymmetry": _flow_asymmetry_sql(),
-        "runs_test": _runs_test_sql(),
-        "mann_kendall": _mann_kendall_sql(),
-        "roc_auc": _roc_auc_sql(),
-        "cohen_kappa": _cohen_kappa_sql(),
-        "mcnemar": _mcnemar_sql(),
-        "transfer_entropy": _transfer_entropy_sql(),
-        "granger_causality": _granger_causality_sql(),
-        "permutation_entropy": _permutation_entropy_sql(),
-        "sample_entropy": _sample_entropy_sql(),
-        "hurst_rs": _hurst_rs_sql(),
-        "visibility_graph": _visibility_graph_sql(),
-        "page_hinkley": _page_hinkley_sql(),
-        "elo_replay": _elo_replay_sql(),
-        "kcenter_coreset": _kcenter_coreset_sql(),
-        "topsis_sites": _topsis_sites_sql(),
-        "hmm_forward": _hmm_forward_sql(),
-        "g_test": _g_test_sql(),
-        "rmst": _rmst_sql(),
-        "odds_ratio": _odds_ratio_sql(),
-        "siegel_slopes": _siegel_slopes_sql(),
-        "hopkins_statistic": _hopkins_statistic_sql(),
-        "local_geary": _local_geary_sql(),
-        "item_item_cf": _item_item_cf_sql(),
-        "line_clipping": _line_clipping_sql(),
-        "soundex_blocking": _soundex_blocking_sql(),
-        "maup_audit": _maup_audit_sql(),
-        "variance_partition": _variance_partition_sql(),
-        "knn_regression_cells": _knn_regression_cells_sql(),
-        "beta_binomial_ctr": _beta_binomial_ctr_sql(),
-        "burrows_delta": _burrows_delta_sql(),
-        "beta_diversity": _beta_diversity_sql(),
-        "yule_k": _yule_k_sql(),
-        "contagion_index": _contagion_index_sql(),
-        "yokoi_connectivity": _yokoi_connectivity_sql(),
-        "binary_morphology": _binary_morphology_sql(),
-        "lacunarity": _lacunarity_sql(),
-        "jenks_breaks": _jenks_breaks_sql(),
-        "von_mises_hours": _von_mises_hours_sql(),
-        "ljung_box": _ljung_box_sql(),
-        "burt_constraint": _burt_constraint_sql(),
-        "mark_correlation": _mark_correlation_sql(),
-        "brier_decomposition": _brier_decomposition_sql(),
-        "theils_u2": _theils_u2_sql(),
-        "morisita_index": _morisita_index_sql(),
-        "xicor": _xicor_sql(),
-        "crps_eval": _crps_eval_sql(),
-        "pinball_loss": _pinball_loss_sql(),
-        "kuiper_test": _kuiper_test_sql(),
-        "knapsack_sites": _knapsack_sites_sql(),
-        "anderson_darling": _anderson_darling_sql(),
-        "broken_stick": _broken_stick_sql(),
-        "ppcc_expon": _ppcc_expon_sql(),
-        "turning_points": _turning_points_sql(),
-        "skyline_sites": _skyline_sites_sql(),
-        "shapley_coverage": _shapley_coverage_sql(),
-        "dea_efficiency": _dea_efficiency_sql(),
-        "qn_scale": _qn_scale_sql(),
-        "taylors_law": _taylors_law_sql(),
-        "simpsons_paradox": _simpsons_paradox_sql(),
-        "partial_correlation": _partial_correlation_sql(),
-        "growth_accounting": _growth_accounting_sql(),
-        "harrell_c": _harrell_c_sql(),
-        "gumbel_maxima": _gumbel_maxima_sql(),
-        "tsp_sites": _tsp_sites_sql(),
-        "log_loss_eval": _log_loss_eval_sql(),
-        "welch_t": _welch_t_sql(),
-        "ppcc_weibull": _ppcc_weibull_sql(),
-        "madogram": _madogram_sql(),
-        "bhattacharyya_hours": _bhattacharyya_hours_sql(),
-        "goertzel_power": _goertzel_power_sql(),
-        "james_stein": _james_stein_sql(),
-        "atkinson_index": _atkinson_index_sql(),
-        "bradley_terry": _bradley_terry_sql(),
-        "spatial_markov": _spatial_markov_sql(),
-        "rnn_influence": _rnn_influence_sql(),
-        "boosted_stumps": _boosted_stumps_sql(),
-        "interarrival_fit": _interarrival_fit_sql(),
         "doc_perplexity": _doc_perplexity_sql(),
-        "trajectory_simplify": _trajectory_simplify_sql(),
-        "quadkey_tiles": _quadkey_tiles_sql(),
-        "ripley_k": _ripley_k_sql(),
-        "emerging_hotspots": _emerging_hotspots_sql(),
-        "similar_users": _similar_users_sql(),
-        "doc_boilerplate": _doc_boilerplate_sql(),
-        "zorder_layout": _zorder_layout_sql(),
-        "hilbert_layout": _hilbert_layout_sql(),
-        "hex_density": _hex_density_sql(),
-        "geohash_coverage": _geohash_coverage_sql(),
-        "kmeans_geo": _kmeans_geo_sql(),
-        "snap_points": _snap_points_sql(),
-        "cell_sssp": _cell_sssp_sql(),
-        "density_gradient": _density_gradient_sql(),
-        "clark_evans": _clark_evans_sql(),
-        "gravity_fit": _gravity_fit_sql(),
-        "dtw_pairs": _dtw_pairs_sql(),
-        "hausdorff_pairs": _hausdorff_pairs_sql(),
-        "event_funnel": _event_funnel_sql(),
-        "theil_sen_cells": _theil_sen_sql(),
-        "zrange_scan": _zrange_scan_sql(),
-        "kanon_cells": _kanon_cells_sql(),
-        "funnel_stages": _funnel_stages_sql(),
         "seq_packing": _seq_packing_sql(),
-        "hilbert_range_scan": _hilbert_range_scan_sql(),
-        "cohort_retention": _cohort_retention_sql(),
-        "adoption_curve": _adoption_curve_sql(),
         "pip_donut": _pip_donut_sql(),
-        "pmi_bigrams": _pmi_bigrams_sql(),
-        "weighted_sample": _weighted_sample_sql(),
-        "cusum_cells": _cusum_cells_sql(),
-        "user_streaks": _user_streaks_sql(),
-        "benford_values": _benford_values_sql(),
-        "value_correlations": _value_correlations_sql(),
-        "bearing_rose": _bearing_rose_sql(),
-        "cell_isochrone": _cell_isochrone_sql(),
-        "cell_pagerank": _cell_pagerank_sql(),
-        "user_colocation": _user_colocation_sql(),
-        "traj_crossings": _traj_crossings_sql(),
-        "doc_stratified_sample": _doc_stratified_sample_sql(),
-        "user_activity_mask": _user_activity_mask_sql(),
-        "user_hourly_fill": _user_hourly_fill_sql(),
-        "cell_trend_slope": _cell_trend_slope_sql(),
         "doc_dup_substrings": _doc_dup_substrings_sql(),
-        "doc_skyline": _doc_skyline_sql(),
-        "doc_quality_percentile": _doc_quality_percentile_sql(),
-        "cell_covisit": _cell_covisit_sql(),
         "ivf_knn_ann": _ivf_knn_ann_sql(),
         "tree_build_synthetic": _tree_build_synthetic_sql(),
         "tree_build_overlap": _tree_build_overlap_sql(),
@@ -41383,12 +4751,6 @@ def oracle_sql() -> dict[str, str]:
                 FROM orders WHERE o_custkey < 100)
             WHERE rn <= 2
         """,
-        "asof_prior_click": _ASOF_PRIOR_CLICK_SQL,
-        "click_purchase_join": _CLICK_PURCHASE_SQL,
-        "events_rollup": _EVENTS_ROLLUP_SQL,
-        "events_pivot": _EVENTS_PIVOT_SQL,
-        "events_sliding": _EVENTS_SLIDING_SQL,
-        "user_running_stats": _USER_RUNNING_SQL,
         "train_decontam": f"""
             WITH s AS (SELECT doc_id, text, {hash_split_sql("doc_id")} AS split
                        FROM documents),
@@ -41413,35 +4775,12 @@ def oracle_sql() -> dict[str, str]:
             FROM qz ORDER BY qdist ASC, vec_id ASC LIMIT 10
         """,
         "pq_knn": _pq_knn_sql(),
-        "events_hourly_stats": """
-            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-                   event_type, COUNT(*) AS n_events, ROUND(SUM(value), 4) AS sum_value,
-                   COUNT(DISTINCT user_id) AS n_users
-            FROM events GROUP BY 1, 2
-        """,
         "json_props": """
             SELECT event_type,
                    ROUND(AVG(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6) AS avg_k,
                    CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
                         AS BIGINT) AS sum_k
             FROM events GROUP BY 1
-        """,
-        "user_sessions": """
-            SELECT user_id, sess_id,
-                   strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS start_dt,
-                   strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS end_dt,
-                   COUNT(*) AS n_events, ROUND(SUM(value), 6) AS sum_value
-            FROM (
-                SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id
-                       ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING)
-                       AS BIGINT) AS sess_id
-                FROM (
-                    SELECT *, CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER (
-                               PARTITION BY user_id ORDER BY ts, event_id)
-                               > 1800000000
-                              THEN 1 ELSE 0 END AS new_sess
-                    FROM events WHERE user_id < 100)
-            ) GROUP BY user_id, sess_id
         """,
         "path_to_root": """
             WITH RECURSIVE p AS (
@@ -41462,37 +4801,6 @@ def oracle_sql() -> dict[str, str]:
                   FROM events WHERE user_id < 200)
             WHERE rn = 1
         """,
-        "revenue_by_nation": """
-            SELECT n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   COUNT(*) AS n_items
-            FROM region JOIN nation ON n_regionkey = r_regionkey
-            JOIN customer ON c_nationkey = n_nationkey
-            JOIN orders ON o_custkey = c_custkey
-            JOIN lineitem ON l_orderkey = o_orderkey
-            WHERE r_name = 'ASIA'
-            GROUP BY 1
-        """,
-        "filtered_revenue": """
-            SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
-                   COUNT(*) AS n_items
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-              AND l_shipdate < TIMESTAMP '1997-01-01'
-              AND l_discount BETWEEN 0.05 AND 0.07
-              AND l_quantity < 24
-        """,
-        "shipping_priority": """
-            SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-                   o_orderpriority,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM customer JOIN orders ON c_custkey = o_custkey
-            JOIN lineitem ON o_orderkey = l_orderkey
-            WHERE c_mktsegment = 'AUTOMOBILE'
-              AND o_orderdate < TIMESTAMP '1998-01-01'
-              AND l_shipdate > TIMESTAMP '1998-01-01'
-            GROUP BY 1, 2, 3
-            ORDER BY revenue DESC, l_orderkey ASC LIMIT 10
-        """,
         "price_bucket_range_join": """
             SELECT bucket, COUNT(*) AS n_orders, ROUND(SUM(o_totalprice), 2) AS sum_price
             FROM orders JOIN (VALUES ('low', 0.0, 100000.0), ('mid', 100000.0, 250000.0),
@@ -41508,23 +4816,6 @@ def oracle_sql() -> dict[str, str]:
                    length(text) AS n_chars
             FROM documents WHERE doc_id < 200
         """,
-        "doc_winnow_fp": _doc_winnow_fp_sql(),
-        "doc_token_stats": _doc_token_stats_sql(),
-        "events_quantiles": """
-            SELECT event_type, ROUND(quantile_cont(value, 0.5), 6) AS p50,
-                   ROUND(quantile_cont(value, 0.9), 6) AS p90,
-                   COUNT(*) AS n_events
-            FROM events GROUP BY 1
-        """,
-        "query_normalize": (
-            lambda nq: f"""
-            SELECT doc_id,
-                   CAST({token_count_sql("text")} AS BIGINT) AS n_tokens,
-                   CAST(length({nq}) AS BIGINT) AS norm_len,
-                   COALESCE(substring({nq}, 1, 24), '<rejected>') AS norm_head
-            FROM documents WHERE doc_id < 300
-        """
-        )(normalize_query_sql("text", soft_cap=50, hard_cap=90, target_tokens=30)),
         "event_type_setops": """
             SELECT event_type, 'both' AS src FROM
                 (SELECT event_type FROM events WHERE event_id % 2 = 0
@@ -41547,19 +4838,6 @@ def oracle_sql() -> dict[str, str]:
             f"CAST(SUM({token_count_sql('text')}) AS BIGINT) AS n_tokens "
             f"FROM documents GROUP BY 1"
         ),
-        "top_terms_per_lang": """
-            SELECT lang, term, n, rk FROM (
-                SELECT lang, term, n,
-                       ROW_NUMBER() OVER (PARTITION BY lang
-                           ORDER BY n DESC, term ASC) AS rk
-                FROM (
-                    SELECT lang, term, COUNT(*) AS n FROM (
-                        SELECT lang, unnest(regexp_split_to_array(
-                            lower(trim(text)), '\\s+')) AS term
-                        FROM documents)
-                    WHERE term <> '' GROUP BY 1, 2)
-            ) WHERE rk <= 5
-        """,
         "doc_quality_top20": (
             f"SELECT doc_id, {quality_score_sql('text')} AS quality FROM documents "
             f"ORDER BY quality DESC, doc_id ASC LIMIT 20"

@@ -2,8 +2,8 @@
 """Benchmark harness (driver-run, per-round).
 
 Prints ONE COMPACT JSON line (< 1 KB — the driver keeps only the last 2000
-chars of stdout) and writes the full report, including every per-headline-
-query timing, to bench_full.json:
+chars of stdout) and writes the full report, including every per-query
+timing, to bench_full.json:
   {"metric": ..., "value": <measured pipeline wall sec>, "unit": "sec",
    "sf": ..., "spans_per_sec": ..., "queries": {...slowest-5 sec...},
    "queries_n": ..., "queries_full": "bench_full.json",
@@ -18,13 +18,12 @@ Structure (see raptor_service_spark/pipeline.py), in EXECUTION ORDER:
      identical prepared input, each after a warmup pass, A-B-A-B best-of-2.
      Scaling efficiency = (thr_4N / thr_N) / 4, north-rule target >= 0.8 on
      the 2->8 pair (numbers recorded in BASELINE.md).
-  3. Headline queries from __spark_entry__.queries() at $SPARK_GRAFT_SF_DIR
+  3. Every __spark_entry__.queries() entry at $SPARK_GRAFT_SF_DIR
      (default /root/testdata/sf0.1), each materialized to the noop sink —
-     LAST, so its ~3-4 min of heat cannot pollute the scaling legs.
+     LAST, so its heat cannot pollute the scaling legs.
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
 SPARK_GRAFT_BENCH_SCALING=0 to skip the scaling legs,
-SPARK_GRAFT_BENCH_QUERY_BUDGET (sweep wall-clock cap, default 420 s),
 SPARK_GRAFT_BENCH_SCALING_BUDGET (retry cap for the probe-gated north-pair
 legs, default 1500 s), SPARK_GRAFT_CODEGEN_STRICT=0 to allow silent
 codegen fallback in the sweep (default: fallback disabled, offenders
@@ -42,442 +41,8 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-HEADLINE = [
-    # Order = sweep priority under SPARK_GRAFT_BENCH_QUERY_BUDGET:
-    # core flagship/geo/dedup/ANN block, then the newest session-12/13
-    # families (never yet timed at sf0.1), then the session-8..11 blocks
-    # whose timings earlier BENCH artifacts already recorded.
-    "grid_collapsed_retrieval",
-    "grid_traversal_retrieval",
-    "doc_cells",
-    "tile_histogram",
-    "pip_docs",
-    "radius_join_docs",
-    "geo_knn_docs",
-    "radius_km_docs",
-    "bbox_overlap_docs",
-    "tri_overlap_docs",
-    "doc_pairs_within",
-    "bm25_topk",
-    "hybrid_retrieval",
-    "cell_kring_smooth",
-    "tile_pyramid",
-    "user_stay_points",
-    "trending_cells",
-    "traj_cells",
-    "tile_topk_docs",
-    "idw_interpolation",
-    "knn_filtered",
-    "lineitem_agg",
-    "sum_qty_per_segment",
-    "latest_order_per_customer",
-    "minhash_pairs",
-    "ngram_jaccard",
-    "doc_repetition",
-    "simhash_pairs",
-    "cosine_neardup_lsh",
-    "knn_top10",
-    "knn_quantized",
-    "pq_knn",
-    "train_decontam",
-    "grid_knn_ann",
-    "reranked_retrieval",
-    "tree_build_docs",
-    "tree_build_synthetic",
-    "collapsed_retrieval_synthetic",
-    # session-14 families (never yet timed at sf0.1) come right after the
-    # core block so the budgeted sweep times them at least once
-    "mann_kendall",
-    "roc_auc",
-    "cohen_kappa",
-    "mcnemar",
-    "transfer_entropy",
-    "granger_causality",
-    "permutation_entropy",
-    "sample_entropy",
-    "hurst_rs",
-    "visibility_graph",
-    "page_hinkley",
-    "elo_replay",
-    "kcenter_coreset",
-    "topsis_sites",
-    "hmm_forward",
-    "g_test",
-    "rmst",
-    "odds_ratio",
-    "siegel_slopes",
-    "hopkins_statistic",
-    "local_geary",
-    "item_item_cf",
-    "line_clipping",
-    "soundex_blocking",
-    "maup_audit",
-    "variance_partition",
-    "knn_regression_cells",
-    "beta_binomial_ctr",
-    "burrows_delta",
-    "beta_diversity",
-    "yule_k",
-    "contagion_index",
-    "yokoi_connectivity",
-    "binary_morphology",
-    "lacunarity",
-    "jenks_breaks",
-    "von_mises_hours",
-    "ljung_box",
-    "burt_constraint",
-    "mark_correlation",
-    "brier_decomposition",
-    "theils_u2",
-    "morisita_index",
-    "xicor",
-    "crps_eval",
-    "pinball_loss",
-    "kuiper_test",
-    "knapsack_sites",
-    "anderson_darling",
-    "broken_stick",
-    "ppcc_expon",
-    "turning_points",
-    "skyline_sites",
-    "shapley_coverage",
-    "dea_efficiency",
-    "qn_scale",
-    "taylors_law",
-    "simpsons_paradox",
-    "partial_correlation",
-    "growth_accounting",
-    "harrell_c",
-    "gumbel_maxima",
-    "tsp_sites",
-    "log_loss_eval",
-    "welch_t",
-    "ppcc_weibull",
-    "madogram",
-    "bhattacharyya_hours",
-    "morans_i",
-    "user_colocation",
-    "cell_pagerank",
-    "cell_trend_slope",
-    "doc_stratified_sample",
-    "ripley_k",
-    "emerging_hotspots",
-    "local_moran",
-    "span_dedup",
-    "quadkey_tiles",
-    "curation_pipeline",
-    "doc_perplexity",
-    "trajectory_simplify",
-    "mmr_retrieval",
-    "od_triangles",
-    "hilbert_layout",
-    "hex_density",
-    "geohash_coverage",
-    "kmeans_geo",
-    "snap_points",
-    "cell_sssp",
-    "density_gradient",
-    "phrase_search",
-    "min_cover_window",
-    "readability_scores",
-    "box_counting_dim",
-    "spearman_corr",
-    "boosted_stumps",
-    "gmm_em_values",
-    "meeting_point",
-    "od_segment_raster",
-    "viewshed_cells",
-    "sfca_accessibility",
-    "lof_outliers",
-    "gwr_cells",
-    "dasymetric_realloc",
-    "modularity_score",
-    "ridge_regression",
-    "llr_bigrams",
-    "d8_flow_dirs",
-    "nearest_centroid_eval",
-    "flow_accumulation",
-    "watershed_basins",
-    "katz_centrality",
-    "mobility_motifs",
-    "jw_title_pairs",
-    "damerau_title_pairs",
-    "cochran_armitage",
-    "simrank_pairs",
-    "gesd_outliers",
-    "majority_automaton",
-    "poisson_irls",
-    "st_dbscan",
-    "james_stein",
-    "atkinson_index",
-    "bradley_terry",
-    "spatial_markov",
-    "hough_lines",
-    "apriori_rules",
-    "median_polish",
-    "curve_locality_audit",
-    "cox_ph",
-    "markov_surprise",
-    "rank_aggregation",
-    "rbp_eval",
-    "logrank_test",
-    "effective_mesh",
-    "harmonic_centrality",
-    "media_phash_pairs",
-    "hill_diversity",
-    "adjusted_rand",
-    "croston_cells",
-    "capture_recapture",
-    "huber_irls",
-    "general_g",
-    "matrix_profile",
-    "domain_shift_ppl",
-    "propensity_ate",
-    "design_effect",
-    "gpd_tail",
-    "seq_patterns",
-    "pair_correlation",
-    "abc_analysis",
-    "bm25f_topk",
-    "polygon_polyfill",
-    "trimmed_means",
-    "nelson_aalen",
-    "power_analysis",
-    "raster_crosstab",
-    "focal_mode",
-    "cost_allocation",
-    "ruggedness_index",
-    "ucb_replay",
-    "shape_compactness",
-    "recurrence_quant",
-    "allan_variance",
-    "regression_influence",
-    "block_entropy",
-    "dyad_census",
-    "fano_factor",
-    "kendall_tau",
-    "competing_risks",
-    "rfm_segments",
-    "cross_variogram",
-    "skew_report",
-    "leaderboard_churn",
-    "week_overlap",
-    "gravity_fit",
-    "dtw_pairs",
-    "theil_sen_cells",
-    "event_funnel",
-    "seq_packing",
-    "zrange_scan",
-    "kanon_cells",
-    "fuzzy_title_pairs",
-    "doc_tfidf_terms",
-    "spacetime_scan",
-    "quadtree_bins",
-    "speed_anomalies",
-    "cell_kcore",
-    "join_counts",
-    "gearys_c",
-    "source_delta",
-    "colocation_quotient",
-    "heaps_law",
-    "cluster_hulls",
-    "g_function",
-    "mixture_resample",
-    "interarrival_fit",
-    "doc_bigram_ppl",
-    "bpe_merges",
-    "teleport_flags",
-    "huff_demand",
-    "quadrat_csr",
-    "hourly_acf",
-    "cross_k",
-    "deviational_ellipse",
-    "knox_test",
-    "span_transitions",
-    "doc_char_entropy",
-    "cell_markov",
-    "user_burstiness",
-    "cell_gini",
-    "ivf_knn_ann",
-    "tree_build_overlap",
-    "traversal_retrieval_synthetic",
-    "media_features",
-    "neardup_components",
-    "doc_dup_substrings",
-    "dsir_weights",
-    "viterbi_match",
-    "rendezvous_shards",
-    "pip_polygon_table",
-    "cotravel_pairs",
-    "pca_top_component",
-    "colbert_maxsim",
-    "contact_reach",
-    "semivariogram",
-    "variogram_fit",
-    "od_ipf_balance",
-    "kmv_distinct",
-    "bloom_semi_join",
-    "cms_heavy_hitters",
-    "histogram_quantiles",
-    "matryoshka_recall",
-    "bpe_encode",
-    "kmv_set_ops",
-    "binary_quant_recall",
-    "psi_drift",
-    "ks_two_sample",
-    "fellegi_sunter",
-    "cell_seasonal",
-    "radiation_model",
-    "ab_proportions",
-    "fdr_hotspots",
-    "ewma_anomaly",
-    "prf_expansion",
-    "commute_flows",
-    "chaikin_smooth",
-    "media_ahash_dedup",
-    "rbo_rankings",
-    "kaplan_meier",
-    "did_estimator",
-    "dp_cell_counts",
-    "join_size_estimate",
-    "crosstrack_deviation",
-    "hits_scores",
-    "rocchio_feedback",
-    "cdc_chunks",
-    "link_prediction",
-    "jsd_sources",
-    "kn_bigram_lm",
-    "hll_distinct",
-    "textrank_keywords",
-    "lpa_communities",
-    "nb_langid",
-    "silhouette_kmeans",
-    "symspell_lookup",
-    "logreg_train",
-    "moran_correlogram",
-    "monge_elkan_pairs",
-    "media_scene_cuts",
-    "permutation_test",
-    "maxscore_pruning",
-    "minhash_jaccard_audit",
-    "markov_attribution",
-    "graph_eccentricity",
-    "ldiv_tcloseness",
-    "semivariogram_dir",
-    "cell_xcorr",
-    "align_titles",
-    "jl_projection_audit",
-    "spherical_centroid",
-    "mobility_entropy_rate",
-    "term_burstiness",
-    "participation_index",
-    "greedy_set_cover",
-    "segregation_indices",
-    "percolation_curve",
-    "stl_lite",
-    "changepoint_detect",
-    "ransac_fit",
-    "next_cell_eval",
-    "span_position_profile",
-    "multiprobe_lsh_recall",
-    "rayleigh_bearing",
-    "bootstrap_ci",
-    "pr_curve_11pt",
-    "kalman_tracks",
-    "holt_trend_cells",
-    "semdedup_clusters",
-    "plsa_topics",
-    "kde_hotspots",
-    "hard_negatives",
-    "betweenness_cells",
-    "temporal_motifs",
-    "clarity_score",
-    "rouge_pairs",
-    "cell_ktruss",
-    "good_turing",
-    "chao1_richness",
-    "wilson_ctr",
-    "sprt_monitor",
-    "ppr_sweep_cut",
-    "rich_club",
-    "randomized_response",
-    "bivariate_moran",
-    "kriging_ordinary",
-    "f_function",
-    "rake_keywords",
-    "conformal_intervals",
-    "isotonic_hourly",
-    "media_dhash_pairs",
-    "texttiling_boundaries",
-    "traj_sinuosity",
-    "lee_l",
-    "calibration_bins",
-    "mst_cells",
-    "mad_outliers",
-    "theil_decomposition",
-    "jump_length_fit",
-    "cell_segmentation",
-    "dbsf_fusion",
-    "best_passage",
-    "idw_loocv",
-    "contour_cases",
-    "region_bboxes",
-    "blocking_quality",
-    "decision_stump",
-    "ot_transport_plan",
-    "media_run_lengths",
-    "lru_hit_rate",
-]
-
 SEED = 77
 WARMUP_DOCS = 5000
-
-# Flagship comparability block: always swept first, every round, so
-# round-over-round numbers exist for the core geo/dedup/ANN/tree queries.
-PINNED_HEAD = HEADLINE[:37]
-
-
-def _load_timed() -> dict:
-    """Cumulative sf0.1 timing ledger (committed as bench_timed.json).
-
-    Keys: ``runs`` (monotone sweep counter) and ``queries``
-    ({name: {"sec": s, "run": r}}).  Used to order the budgeted sweep so
-    never-timed registry entries get priority until all have at least one
-    recorded sf0.1 number (VERDICT r3 item 7: no permanently-untimed tail)."""
-    try:
-        with open(os.path.join(REPO, "bench_timed.json")) as f:
-            d = json.load(f)
-        if "queries" in d:
-            return d
-    except (OSError, ValueError):
-        pass
-    return {"runs": 0, "queries": {}}
-
-
-def _save_timed(ledger: dict, per_query: dict) -> None:
-    run = ledger.get("runs", 0) + 1
-    ledger["runs"] = run
-    for name, sec in per_query.items():
-        ledger["queries"][name] = {"sec": sec, "run": run}
-    with open(os.path.join(REPO, "bench_timed.json"), "w") as f:
-        json.dump(ledger, f, indent=0, sort_keys=True)
-
-
-def _sweep_order(all_names: list[str], ledger: dict) -> list[str]:
-    """Pinned flagship head, then never-timed entries (registry order), then
-    the timed remainder stalest-run-first — so under a wall-clock budget the
-    sweep always advances cumulative coverage instead of re-timing the same
-    prefix every round."""
-    timed = ledger["queries"]
-    head = [n for n in PINNED_HEAD if n in all_names]
-    headset = set(head)
-    never = [n for n in all_names if n not in timed and n not in headset]
-    rest = sorted(
-        (n for n in all_names if n in timed and n not in headset),
-        key=lambda n: (timed[n].get("run", 0), n),
-    )
-    return head + never + rest
-
 
 def _sf_of(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
@@ -691,7 +256,7 @@ def main() -> None:
         full = min((_measured_subprocess(cpus, spans_path, warm_path)
                     for _ in range(2)), key=lambda r: r["sec_total"])
 
-    # HEADLINE QUERY SWEEP LAST (it heats the box for ~3-4 min; keeping it
+    # QUERY SWEEP LAST (it heats the box for minutes; keeping it
     # after the scaling legs keeps the north pair clean).
     import __spark_entry__ as entry_mod
     from raptor_service_spark.session import get_spark
@@ -709,45 +274,23 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     qmap = entry_mod.queries()
-    # Warmup: touch every driver table once so the first headline query's
+    # Warmup: touch every driver table once so the first query's
     # number reflects the query, not JVM/codegen/parquet-footer cold start.
     for t in ("documents", "embeddings", "orders", "lineitem", "events"):
         spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
-    # The registry has grown past 490 queries; an unbounded sweep at sf0.1
-    # could outlast the driver's capture window (the round-2 lesson in a new
-    # costume). Budget the sweep wall-clock — queries run in ledger-aware
-    # order (_sweep_order: flagship head, then never-timed, then stalest),
-    # the remainder is counted, not silently dropped (No-silent-caps rule).
-    # 480 s (round 5): cosine_neardup's 58 s headline cost was reclaimed by
-    # the capped parity anchor, and +60 s of budget covers ~60 more of the
-    # 499-query registry per sweep (BENCH_r04 skipped 197; target < 140).
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_QUERY_BUDGET", "480"))
-    ledger = _load_timed()
-    all_names = HEADLINE + [n for n in qmap if n not in set(HEADLINE)]
-    order = _sweep_order(all_names, ledger)
     per_query: dict[str, float] = {}
     query_errors: dict[str, str] = {}  # strict-codegen failures AND any
     # other per-query raise (e.g. a data-dependent ANSI error only a larger
     # SF triggers) — recorded by name, sweep continues
-    skipped = 0
-    sweep_t0 = time.perf_counter()
-    for name in order:
-        if time.perf_counter() - sweep_t0 > budget:
-            skipped += 1
-            continue
+    for name, q in qmap.items():
         t0 = time.perf_counter()
         try:
-            df = qmap[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            q(spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception as e:  # noqa: BLE001 - recorded, sweep continues
             query_errors[name] = str(e)[:400]
             continue
         per_query[name] = round(time.perf_counter() - t0, 3)
     spark.stop()
-    if abs(sf - 0.1) < 1e-9:
-        # the ledger is the CUMULATIVE SF0.1 record (cross-round
-        # comparisons read it) — never dilute it with other-SF smoke runs
-        _save_timed(ledger, per_query)
 
     full_report = {
         "metric": "spans/sec through grid encode + PIP join + ANN index build "
@@ -755,11 +298,7 @@ def main() -> None:
         "value": full["sec_total"],
         "unit": "sec",
         "queries": per_query,
-        "queries_skipped": skipped,
         "query_errors": query_errors,
-        "never_timed_remaining": sorted(
-            n for n in all_names if n not in ledger["queries"]
-        ),
         "sf": sf,
         "n_docs": n_docs,
         "n_spans": full["n_spans"],
@@ -783,7 +322,7 @@ def main() -> None:
                  "cores), where the VM's fixed bandwidth does not yet bind.",
         ) if scaling is not None else None,
     }
-    # Full per-query map (93+ entries, ~9 KB) goes to a file: the driver
+    # Full per-query map goes to a file: the driver
     # captures only the last 2000 chars of stdout, so the final printed line
     # must stay compact (round-2 lesson: BENCH_r02 parsed:null).
     with open(os.path.join(REPO, "bench_full.json"), "w") as f:
@@ -799,11 +338,9 @@ def main() -> None:
         "spans_per_sec": full["spans_per_sec"],
         "queries": slowest,
         "queries_n": len(per_query),
-        "queries_skipped": skipped,
         "queries_sec_total": round(sum(per_query.values()), 1),
         "query_errors_n": len(query_errors),
         "query_errors": sorted(query_errors)[:5],
-        "never_timed_n": len(full_report["never_timed_remaining"]),
         "queries_full": "bench_full.json",
         "scaling": scaling,
     }))

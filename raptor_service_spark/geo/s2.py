@@ -202,6 +202,8 @@ def cell_token(cell_id: int) -> str:
 
 
 def token_to_cellid(token: str) -> int:
+    if token == "X":
+        return 0
     u = int(token.ljust(16, "0"), 16)
     return u - (1 << 64) if u >= (1 << 63) else u
 
@@ -222,18 +224,20 @@ def latlng_to_cellid_np(lat, lng, level: int = MAX_LEVEL) -> np.ndarray:
     axis = np.where((ax >= ay) & (ax >= az), 0, np.where(ay >= az, 1, 2))
     major = np.choose(axis, [x, y, z])
     face = np.where(major > 0, axis, axis + 3).astype(np.int64)
-    # gnomonic u, v per face (same table as _face_uv)
-    u = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [y / x, -x / y, -x / z, z / x, z / y],
-        default=-y / z,
-    )
-    v = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [z / x, z / y, -y / z, y / x, -x / y],
-        default=-x / z,
-    )
-    with np.errstate(invalid="ignore"):  # np.where evaluates both branches
+    # np.select / np.where evaluate every branch, so off-face quotients may
+    # divide by zero (on an axis or at a pole); only the selected one is used
+    with np.errstate(divide="ignore", invalid="ignore"):
+        # gnomonic u, v per face (same table as _face_uv)
+        u = np.select(
+            [face == 0, face == 1, face == 2, face == 3, face == 4],
+            [y / x, -x / y, -x / z, z / x, z / y],
+            default=-y / z,
+        )
+        v = np.select(
+            [face == 0, face == 1, face == 2, face == 3, face == 4],
+            [z / x, z / y, -y / z, y / x, -x / y],
+            default=-x / z,
+        )
         st_u = np.where(u >= 0, 0.5 * np.sqrt(1 + 3 * u), 1 - 0.5 * np.sqrt(1 - 3 * u))
         st_v = np.where(v >= 0, 0.5 * np.sqrt(1 + 3 * v), 1 - 0.5 * np.sqrt(1 - 3 * v))
     n = np.int64(1) << level
@@ -317,7 +321,7 @@ def s2_sql_chain(
     """Chained-CTE SQL computing the S2 id for (face, i, j) at ``level``.
 
     Pure +, *, floor, %, CASE arithmetic — the identical string is valid in
-    Spark SQL and DuckDB (repo convention, see geo/hilbert.py), so the
+    Spark SQL and DuckDB (repo convention, see geo/grid.py), so the
     driver oracle hash-checks the codec itself.  One CTE per level threads
     the (d, r) Hilbert state; no expression blowup in either engine.
     ``keep_cols`` are the passthrough columns of the final SELECT."""

@@ -170,8 +170,7 @@ def best_list_col(vec_name: str, cents: list[tuple[int, list[float]]]) -> F.Colu
 
 
 def _round_half_up9_np(x):
-    """Vectorized HALF_UP at 9 dp with F.round's exact semantics (the
-    streaming/teleport.py:_round_half_up6 recipe at 9 dp): fast path
+    """Vectorized HALF_UP at 9 dp with F.round's exact semantics: fast path
     floor(x·1e9 + 0.5)/1e9; elements within a few ulps of a .5 boundary —
     where the binary product can disagree with the shortest-decimal view
     BigDecimal.valueOf uses — re-round exactly via Decimal(repr(x))."""

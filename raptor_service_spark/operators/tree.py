@@ -321,9 +321,16 @@ def _run_ladder(
     n_cur: int,
     p: TreeParams,
     sink,
+    release: bool = False,
 ) -> tuple[int, list[dict]]:
     """Drive the ladder from start_level+1 upward; sink(level, parents, edges,
-    links) persists each level. Returns (top_level, stats).
+    links) persists each level and returns the links the next level reads.
+    Returns (top_level, stats).
+
+    With ``release`` the cached input ``cur`` and every cached level are
+    unpersisted once the next level has been sunk, so the caller ends up
+    holding no cache. That is only sound when the sink cuts the lineage by
+    returning links read back from storage.
 
     Trees that reach their root at a level leave the ascent (their single
     node must never be re-aggregated into a phantom super-root); the loop
@@ -333,21 +340,24 @@ def _run_ladder(
     ladder = list(p.res_ladder)
     stats: list[dict] = []
     level = start_level
+    cached = cur
     while level < len(ladder) - 1 and n_cur > 1 and level < p.max_levels:
         level += 1
         child_res, parent_res = ladder[level - 1], ladder[level]
         parents, edges, links, n_groups, forced = _ascend_one_level(
             cur, cur_links, level, child_res, parent_res, p, n_cur
         )
-        parents = parents.persist()
-        sink(level, parents, edges, links)
+        cur_links = sink(level, parents, edges, links)
         stats.append(
             {"level": level, "groups": n_groups, "children": n_cur, "forced_single": forced}
         )
-        cur.unpersist() if level > start_level + 1 else None
+        if release:
+            cached.unpersist()
+        cached = parents
         cur = parents.select(*NODE_COLS).filter(F.col("kind") != "root")
-        cur_links = links
         n_cur = cur.count()
+    if release:
+        cached.unpersist()
     return level, stats
 
 
@@ -371,6 +381,7 @@ def build_tile_tree(spans_embedded: DataFrame, params: TreeParams | None = None)
         acc_nodes.append(parents.select(*NODE_COLS))
         acc_edges.append(edges)
         acc_links.append(links)
+        return links
 
     top, stats = _run_ladder(leaves, leaf_links, 0, n_leaves, p, sink)
 
@@ -447,12 +458,12 @@ def ingest_incremental(
     ).persist()
     links0 = catalog.read(t_links).filter(F.col("level") == 0)
     n_guard = leaves_dirty.count() + 1  # stall guard disabled (see docstring)
-    parents, edges, links, _, forced = _ascend_one_level(
+    lvl1_dirty, edges, links, _, forced = _ascend_one_level(
         leaves_dirty, links0, 1, ladder[0], ladder[1], p, n_guard
     )
     assert not forced
     # kind is decided globally below (the restricted set must not self-promote)
-    parents = parents.withColumn("kind", F.lit("summary")).persist()
+    parents = lvl1_dirty.withColumn("kind", F.lit("summary"))
 
     # 4. merge level 1: recomputed ids are deterministic per cell, so the
     # delete set is exactly the dirty cells / their parent ids. Deletes are
@@ -474,7 +485,7 @@ def ingest_incremental(
                             extra_predicate="level = 1", props={"op": "ingest"})
     catalog.append(t_links, links, props={"level": 1, "op": "ingest"})
     leaves_dirty.unpersist()
-    parents.unpersist()
+    lvl1_dirty.unpersist()
 
     # 5. rebuild levels >= 2 from the merged level 1 (tiny tables)
     for t in (t_edges, t_links, t_nodes):
@@ -501,17 +512,15 @@ def ingest_incremental(
         .filter((F.col("level") == 1) & (F.col("kind") != "root"))
         .persist()
     )
-    n_active = active.count()
-    top = 1
-    if n_active:
-        links1 = catalog.read(t_links).filter(F.col("level") == 1)
+    links1 = catalog.read(t_links).filter(F.col("level") == 1)
 
-        def sink(level, parents_l, edges_l, links_l):
-            catalog.append(t_links, links_l, props={"level": level, "op": "ingest"})
-            catalog.append(t_edges, edges_l, props={"level": level, "op": "ingest"})
-            catalog.append(t_nodes, parents_l.select(*NODE_COLS), props={"level": level, "op": "ingest"})
+    def sink(level, parents_l, edges_l, links_l):
+        catalog.append(t_links, links_l, props={"level": level, "op": "ingest"})
+        catalog.append(t_edges, edges_l, props={"level": level, "op": "ingest"})
+        catalog.append(t_nodes, parents_l.select(*NODE_COLS), props={"level": level, "op": "ingest"})
+        return catalog.read(t_links).filter(F.col("level") == level)
 
-        top, _ = _run_ladder(active, links1, 1, n_active, p, sink)
+    top, _ = _run_ladder(active, links1, 1, active.count(), p, sink, release=True)
 
     spark = new_spans_embedded.sparkSession
     nodes = catalog.read(t_nodes)
@@ -545,6 +554,7 @@ def build_tile_tree_checkpointed(
         catalog.append(t_links, links, props={"level": level})
         catalog.append(t_edges, edges, props={"level": level})
         catalog.append(t_nodes, parents.select(*NODE_COLS), props={"level": level})
+        return catalog.read(t_links).filter(F.col("level") == level)
 
     if resume and catalog.exists(t_nodes):
         nodes = catalog.read(t_nodes)
@@ -570,7 +580,7 @@ def build_tile_tree_checkpointed(
         catalog.append(t_nodes, leaves.select(*NODE_COLS), props={"level": 0})
         cur, cur_links, n_cur, start_level = leaves, leaf_links, leaves.count(), 0
 
-    top, stats = _run_ladder(cur, cur_links, start_level, n_cur, p, sink)
+    top, stats = _run_ladder(cur, cur_links, start_level, n_cur, p, sink, release=True)
 
     spark = spans_embedded.sparkSession
     nodes = catalog.read(t_nodes)

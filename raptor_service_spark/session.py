@@ -26,12 +26,15 @@ def get_spark(
     bound, not a tuning cliff.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
 
+    builder = SparkSession.builder.appName(app_name)
+    # Under spark-submit the JVM starts first and hands Python its gateway;
+    # the master it was given then stays in force unless one is passed here.
+    if master or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(master or f"local[{cpus}]")
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+        builder
         # Arrow transport for every pandas UDF / toPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -5,34 +5,23 @@ DuckDB over the same parquet tables, compares row count, schema width, and a
 value hash over name-sorted columns — the same compare the driver records in
 CORRECTNESS_r{N}.json.  Usage::
 
-    python scripts/check_oracles.py [sf_dir] [only_query ...]
-    python scripts/check_oracles.py --stratified N [sf_dir] [--json out.json]
+    python scripts/check_oracles.py [sf_dir] [only_query ...] [--json out.json]
 
-``--stratified N`` (VERDICT r4 item 7) checks the first 50 registry keys
-(the driver's rotated gate window, which already leads with the
-always-gated core) PLUS a deterministic md5-hash sample of the remainder up
-to N total — so three rounds of stratified runs cover the whole registry
-even though any single driver gate samples only 50/499.  The sample is
-keyed on (query name, committed-round count), so it shifts each round but
-is identical for everyone on the same commit.  ``--json`` writes the
-per-query verdicts as a driver-shaped artifact.
+``--json`` writes the per-query verdicts as a driver-shaped artifact.
 """
 from __future__ import annotations
 
 import hashlib
 import json
 import math
+import os
 import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 args = sys.argv[1:]
-STRATIFIED = 0
 JSON_OUT = None
-if "--stratified" in args:
-    i = args.index("--stratified")
-    STRATIFIED = int(args[i + 1])
-    del args[i:i + 2]
 if "--json" in args:
     i = args.index("--json")
     JSON_OUT = args[i + 1]
@@ -70,15 +59,8 @@ def value_hash(rows, cols):
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as mod
     from raptor_service_spark.session import get_spark
 
     spark = get_spark()
@@ -90,38 +72,10 @@ def main() -> int:
         )
 
     qs, os_ = mod.queries(), mod.oracle_sql()
-    selected = set(qs)
-    if STRATIFIED:
-        keys = list(qs)
-        head = keys[:50]  # the driver's gate window (core + rotation)
-        # seed the hash sample on the committed-round count (same source of
-        # truth as _registry_rotation) so the sample shifts per round but is
-        # identical on every checkout of the same commit
-        import subprocess
-
-        try:
-            out = subprocess.run(
-                ["git", "-C", "/root/repo", "ls-files", "CORRECTNESS_r*.json"],
-                capture_output=True, text=True, timeout=10, check=True,
-            ).stdout
-            rounds = len([ln for ln in out.splitlines() if ln.strip()])
-        except Exception:
-            rounds = 0
-        rest = sorted(
-            (n for n in keys[50:]),
-            key=lambda n: hashlib.md5(f"{rounds}|{n}".encode()).hexdigest(),
-        )
-        selected = set(head + rest[: max(0, STRATIFIED - len(head))])
-        print(
-            f"stratified: {len(head)} gate-window + "
-            f"{len(selected) - len(head)} hash-sampled (seed round={rounds})"
-        )
     bad = 0
     results = {}
     for name, fn in qs.items():
         if ONLY and name not in ONLY:
-            continue
-        if STRATIFIED and name not in selected:
             continue
         if name not in os_:
             print(f"{name:35s} rows-only (no oracle)")

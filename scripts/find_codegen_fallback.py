@@ -12,7 +12,6 @@ Usage::
 """
 from __future__ import annotations
 
-import importlib.util
 import os
 import sys
 import time
@@ -22,13 +21,8 @@ ONLY = sys.argv[2:]
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
-    spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as mod
     from raptor_service_spark.session import get_spark
 
     spark = get_spark(

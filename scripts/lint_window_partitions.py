@@ -9,8 +9,10 @@ res-4 cells or calendar days) and a scale-killer over anything O(data).
 This lint walks the OPTIMIZED LOGICAL plan of every registry query at
 sf0.001 and, for each Window node with an empty partitionSpec:
 
-- auto-accepts it when a GlobalLimit/LocalLimit sits in the window's child
-  subtree (bounded by construction — the TakeOrderedAndProject pattern);
+- auto-accepts it when every lineage path of the window's input passes
+  through a GlobalLimit/LocalLimit (bounded by construction — the
+  TakeOrderedAndProject pattern); a Limit in an unrelated join branch
+  bounds nothing;
 - otherwise requires the query name in ``ALLOWLIST`` below, where every
   entry must state WHY the window input is bounded.
 
@@ -24,50 +26,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Queries whose partition-less windows run over inputs bounded by
-# CONSTRUCTION, grouped by why the cardinality is constant (it must not
-# grow with the corpus).  This is exactly the set the lint flags today —
-# a new query with a partition-less agg/checkpoint window fails until it
-# is added here with a justification.
-_BOUNDED_BY = {
-    # O(cells at a fixed grid resolution): ≤ 4^res rows regardless of SF
-    "cells": [
-        "cell_gini", "fdr_hotspots", "ppr_sweep_cut", "skew_report",
-        "knapsack_sites", "hot_cells",
-    ],
-    # O(calendar buckets): the fixed observation window caps distinct
-    # hours / days / day-granular event times (incl. day-pair diffs)
-    "time": [
-        "kaplan_meier", "nelson_aalen", "competing_risks", "stl_lite",
-        "changepoint_detect", "page_hinkley", "allan_variance",
-        "peak_prominence", "turning_points", "adoption_curve",
-        "growth_accounting", "theils_u2", "siegel_slopes", "qn_scale",
-        "runs_test", "permutation_entropy", "sample_entropy", "harrell_c",
-        "leaderboard_churn",
-    ],
-    # O(distinct values of a bounded domain): integer-second lags/gaps
-    # capped by the observation window, score/threshold grids, contingency
-    # cells, frequency-of-frequency tables
-    "values": [
-        "join_size_estimate", "mann_whitney", "decision_stump",
-        "boosted_stumps", "emd_values", "roc_auc", "cohen_kappa",
-        "mcnemar", "xicor", "kuiper_test", "anderson_darling",
-        "interarrival_fit", "doc_skyline", "speed_anomalies",
-        "conformal_intervals", "conversion_lag_quantiles",
-    ],
-    # literal-key-bounded cohorts (id < <constant> by construction): the
-    # remaining windows ride the B-replicate / distinct-value aggregates
-    # of the pool plus two-phase rank offsets
-    "pool": ["bootstrap_ci", "spearman_corr"],
-    # dimension-catalog tables (parts), not O(fact rows)
-    "dim": ["abc_analysis"],
-    # two-phase global rank: the only partition-less window is the bucket
-    # OFFSET cumsum over the O(buckets) count aggregate
-    "two_phase": ["rfm_segments", "ppcc_expon", "ppcc_weibull",
-                  "seq_packing"],
-}
-
-ALLOWLIST = {q: why for why, qs in _BOUNDED_BY.items() for q in qs}
+# Query name -> why its partition-less windows run over input bounded by
+# CONSTRUCTION (the cardinality must not grow with the corpus, e.g. O(cells
+# at a fixed resolution) or O(calendar buckets)).  No registry query needs
+# an entry today; a new query with a partition-less agg/checkpoint window
+# fails until it is added here with a justification.
+ALLOWLIST: dict[str, str] = {}
 
 
 def _walk(node):
@@ -81,10 +45,19 @@ def _subtree_kinds(node) -> set:
     return {n.getClass().getSimpleName() for n in _walk(node)}
 
 
+def _limit_bounded(node) -> bool:
+    """True when every path from ``node`` down to a leaf passes a Limit."""
+    if node.getClass().getSimpleName() in ("GlobalLimit", "LocalLimit"):
+        return True
+    ch = node.children()
+    return ch.size() > 0 and all(_limit_bounded(ch.apply(i)) for i in range(ch.size()))
+
+
 def partitionless_windows(df):
     """(window_node, kind) for every partition-less Window in df's optimized
     logical plan.  kind:
-      'limit' — a Limit bounds the input (the TakeOrderedAndProject pattern)
+      'limit' — a Limit on every input lineage path bounds the input (the
+                TakeOrderedAndProject pattern)
       'agg'   — input is an aggregate (bounded by group cardinality;
                 allowlist-gated)
       'ckpt'  — input bottoms out at a localCheckpoint (LogicalRDD) with no
@@ -97,7 +70,7 @@ def partitionless_windows(df):
     for n in _walk(opt):
         if n.getClass().getSimpleName() == "Window" and n.partitionSpec().size() == 0:
             kinds = _subtree_kinds(n.child())
-            if kinds & {"GlobalLimit", "LocalLimit"}:
+            if _limit_bounded(n.child()):
                 kind = "limit"
             elif "Aggregate" in kinds:
                 kind = "agg"

@@ -4,7 +4,7 @@
 Package the library, then submit — the SAME entry runs on a real cluster and
 in local mode; only --master (and executor confs) change:
 
-    cd /root/repo && zip -qr /tmp/raptor_service_spark.zip raptor_service_spark
+    zip -qr /tmp/raptor_service_spark.zip raptor_service_spark
     spark-submit --master local[32] \
         --py-files /tmp/raptor_service_spark.zip \
         scripts/run_pipeline.py --n-docs 800000 --workdir /tmp/pipeline_run
@@ -47,12 +47,11 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from raptor_service_spark.pipeline import prepare_spans_table, run_measured_pipeline
+    from raptor_service_spark.session import get_spark
 
-    # spark-submit owns master/conf; fall back to local for bare `python` runs
-    spark = SparkSession.builder.appName("raptor-span-pipeline").getOrCreate()
+    # spark-submit owns the master; bare `python` runs fall back to local[N]
+    spark = get_spark("raptor-span-pipeline")
     spark.sparkContext.setLogLevel("WARN")
 
     spans_path = os.path.join(args.workdir, f"spans_n{args.n_docs}_s{args.seed}")

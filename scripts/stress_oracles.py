@@ -4,13 +4,12 @@ outcome — catches fold-order / lattice-rounding nondeterminism (the
 class that made the first PCA draft ~2/3 flaky) before the driver's
 sampled gate can trip on it. Usage: python scripts/stress_oracles.py
 [sf_dir]."""
+import os
 import sys
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
-import importlib.util
-spec = importlib.util.spec_from_file_location("entry", "/root/repo/__spark_entry__.py")
-mod = importlib.util.module_from_spec(spec)
-spec.loader.exec_module(mod)
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, os.path.dirname(HERE))
+sys.path.insert(0, HERE)
+import __spark_entry__ as mod
 import duckdb
 from check_oracles import value_hash, TABLES
 from raptor_service_spark.session import get_spark

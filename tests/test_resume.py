@@ -199,6 +199,27 @@ def test_ingest_incremental_multi_dataset(spark, tmp_path):
     assert sorted(r.dataset_id for r in roots) == ["ds-74", "ds-75"]
 
 
+def test_checkpointed_build_and_ingest_release_their_cache(spark, tmp_path):
+    """A checkpointed build plus one ingest leave no persisted RDD behind:
+    every level is released once the next level has read it."""
+    from raptor_service_spark.operators.tree import ingest_incremental
+
+    a = _spans_for(spark, 40, seed=80)
+    b = _spans_for(spark, 10, seed=81)
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    before = persisted()
+
+    cat = SnapshotCatalog(str(tmp_path / "cat_cache"), spark)
+    tree = build_tile_tree_checkpointed(a, PARAMS, catalog=cat, prefix="t", resume=False)
+    assert tree.levels >= 2
+    assert persisted() == before
+    ingest_incremental(b, cat, PARAMS, prefix="t")
+    assert persisted() == before
+
+
 def test_compact_binpacks_files_and_preserves_rows(spark, tmp_path):
     cat = SnapshotCatalog(str(tmp_path / "cat"), spark)
     for i in range(5):  # 5 commits -> 5 data dirs of small files

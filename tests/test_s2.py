@@ -157,6 +157,22 @@ def test_numpy_matches_scalar():
     assert np.array_equal(got, want)
 
 
+def test_axis_and_pole_inputs_warn_nothing():
+    """On an axis or at a pole the off-face quotients divide by zero; the
+    numpy encoder must still match the scalar one without a warning. The
+    invalid zero id round-trips through its token "X"."""
+    import warnings
+
+    pts = [(0.0, 0.0), (0.0, 90.0), (90.0, 0.0), (-90.0, 0.0)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = latlng_to_cellid_np([a for a, _ in pts], [b for _, b in pts])
+    want = np.array([latlng_to_cellid(a, b) for a, b in pts], dtype=np.int64)
+    assert np.array_equal(got, want)
+    assert cell_token(0) == "X"
+    assert token_to_cellid("X") == 0
+
+
 def test_sql_chain_matches_scalar_duckdb():
     import duckdb
 
