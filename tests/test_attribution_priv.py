@@ -11,11 +11,7 @@ def test_markov_solve_closed_form():
     """Hand-built chain: start -> A (1.0); A -> conv 0.5, A -> B 0.5;
     B -> conv 1.0. V(start) = 1.0; removing B: A -> conv 0.5 only, so
     V^(-B) = 0.5 and removal_effect(B) = 0.5."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("entry", "__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    import offpaper_queries as mod
     p = {
         ("start", "click"): 1.0,
         ("click", "conv"): 0.5,

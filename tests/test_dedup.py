@@ -276,6 +276,43 @@ def test_repetition_scores_known_values(spark):
     assert out[3].n_grams == 1 and out[3].rep_ratio == 0.0
 
 
+def test_asof_join_semantics(spark):
+    """Inclusive <=, per-key isolation, NULL when no prior, max-tiebreak on
+    equal timestamps; plan has exactly one non-broadcast exchange (the key
+    window shuffle)."""
+    from raptor_service_spark.operators.asof import asof_join
+
+    left = spark.createDataFrame(
+        [(1, 10, 100), (2, 10, 50), (3, 20, 100)],
+        "event_id long, user_id long, ts long",
+    )
+    right = spark.createDataFrame(
+        [
+            (10, 40, 7, 1.0),   # before both left ts=50/100 for user 10
+            (10, 100, 8, 2.0),  # EQUAL ts as left event 1 -> inclusive match
+            (10, 100, 9, 3.0),  # same ts, larger id -> tiebreak winner
+            (10, 150, 11, 4.0), # after: never matched
+            (30, 10, 12, 5.0),  # other user: isolated
+        ],
+        "user_id long, ts long, event_id long, value double",
+    )
+    out = {
+        r.event_id: (r.prior_event_id, r.prior_value)
+        for r in asof_join(
+            left, right, "user_id", "ts", ["event_id", "value"], tiebreak="event_id"
+        ).collect()
+    }
+    assert out[1] == (9, 3.0)      # equal-ts inclusive + max event_id tiebreak
+    assert out[2] == (7, 1.0)      # only the ts=40 click precedes ts=50
+    assert out[3] == (None, None)  # user 20 has no right rows at all
+
+    plan = (
+        asof_join(left, right, "user_id", "ts", ["event_id", "value"])
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Exchange hashpartitioning") <= 1
+
+
 # ---------------------------------------------------------------------------
 # span-level dedup + reassembly
 # ---------------------------------------------------------------------------

@@ -11,6 +11,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+import offpaper_queries
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = (
@@ -42,8 +43,10 @@ def _canon(rows, cols):
     return sorted(map(repr, out))
 
 
-ORACLES = entry_mod.oracle_sql()
-QUERIES = entry_mod.queries()
+# The paper-surface registry plus the off-paper one: every query in either
+# is held to its oracle.
+ORACLES = {**entry_mod.oracle_sql(), **offpaper_queries.oracle_sql()}
+QUERIES = {**entry_mod.queries(), **offpaper_queries.queries()}
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -92,6 +95,64 @@ def test_every_query_has_an_oracle():
     without its oracle."""
     assert sorted(set(QUERIES) - set(ORACLES)) == []
     assert sorted(set(ORACLES) - set(QUERIES)) == []
+    # the two registries are disjoint, so the merged maps hide nothing
+    assert not set(entry_mod.queries()) & set(offpaper_queries.queries())
+
+
+def test_kanon_invariants(spark, sf_dir):
+    """Every released cell is shared by >= k users (anonymity) AND is the
+    finest ladder level achieving that (utility): one level finer must
+    break the k bound for at least-that-user, verified by recomputing
+    level occupancy from the output-independent home table."""
+    import collections
+
+    import __spark_entry__ as entry_mod
+    from pyspark.sql import functions as F
+    from raptor_service_spark.geo.grid import cell_parent_np
+
+    import numpy as np
+
+    out = {r.user_id: r for r in offpaper_queries.q_kanon_cells(spark, sf_dir).collect()}
+    k, ladder = offpaper_queries._KANON_K, offpaper_queries._KANON_LADDER
+    assert all(r.n_sharing >= k for r in out.values())
+
+    # recompute homes independently (same argmax contract)
+    ev = entry_mod._read(spark, sf_dir, "events").select("event_id", "user_id")
+    lat, lng = entry_mod._latlng_cols(F.col("event_id"))
+    from raptor_service_spark.geo.grid import cell_encode_col
+    from pyspark.sql import Window
+
+    counts = (
+        ev.withColumn("cell", cell_encode_col(lat, lng, ladder[0]))
+        .groupBy("user_id", "cell")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    w = Window.partitionBy("user_id").orderBy(F.col("n").desc(), F.col("cell").asc())
+    homes = {
+        r.user_id: r.cell
+        for r in counts.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .collect()
+    }
+    # per-level occupancy from homes
+    occ = {r: collections.Counter() for r in ladder}
+    for u, c in homes.items():
+        for r in ladder:
+            p = c if r == ladder[0] else int(cell_parent_np(np.array([c]), r)[0])
+            occ[r][p] += 1
+    for u, row in out.items():
+        c = homes[u]
+        # claimed level holds
+        p = c if row.anon_res == ladder[0] else int(
+            cell_parent_np(np.array([c]), row.anon_res)[0]
+        )
+        assert p == row.anon_cell and occ[row.anon_res][p] == row.n_sharing
+        # finest: every finer ladder level breaks k
+        for r in ladder:
+            if r <= row.anon_res:
+                continue
+            pf = c if r == ladder[0] else int(cell_parent_np(np.array([c]), r)[0])
+            assert occ[r][pf] < k
 
 
 def test_seq_packing_invariants(spark, sf_dir):
@@ -111,3 +172,22 @@ def test_seq_packing_invariants(spark, sf_dir):
         assert r.bin_end == (cum + r.tok - 1) // budget
         cum += r.tok
     assert rows, "packing produced no rows"
+
+
+def test_weighted_sample_favors_heavy_docs(spark, sf_dir):
+    """A-Res sanity: the weighted sample's mean n_chars must exceed the
+    corpus mean (weights = n_chars), and the draw is deterministic."""
+    import __spark_entry__ as entry_mod
+    from pyspark.sql import functions as F
+
+    s1 = offpaper_queries.q_weighted_sample(spark, sf_dir).collect()
+    s2 = offpaper_queries.q_weighted_sample(spark, sf_dir).collect()
+    assert s1 == s2
+    sample_mean = sum(r.n_chars for r in s1) / len(s1)
+    corpus_mean = (
+        entry_mod._read(spark, sf_dir, "documents")
+        .agg(F.avg("n_chars").alias("m"))
+        .collect()[0]
+        .m
+    )
+    assert sample_mean > corpus_mean

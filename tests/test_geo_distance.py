@@ -82,6 +82,117 @@ def test_tile_pyramid_equals_per_res_aggs(spark):
     assert got == want
 
 
+def test_bbox_self_join_matches_bruteforce(spark):
+    from raptor_service_spark.operators.bbox_join import bbox_self_join
+
+    rng = np.random.default_rng(21)
+    n = 200
+    clat = rng.uniform(-80, 80, n)
+    clng = rng.uniform(-170, 170, n)
+    hlat = rng.uniform(0.5, 8.0, n)
+    hlng = rng.uniform(0.5, 8.0, n)
+    rows = [
+        (int(i), float(clat[i] - hlat[i]), float(clat[i] + hlat[i]),
+         float(clng[i] - hlng[i]), float(clng[i] + hlng[i]))
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, lat_lo double, lat_hi double, lng_lo double, lng_hi double"
+    )
+    got = sorted((r["id_a"], r["id_b"]) for r in bbox_self_join(df, res=5).collect())
+    want = sorted(
+        (i, j)
+        for i in range(n)
+        for j in range(i + 1, n)
+        if rows[i][1] <= rows[j][2] and rows[j][1] <= rows[i][2]
+        and rows[i][3] <= rows[j][4] and rows[j][3] <= rows[i][4]
+    )
+    assert got == want
+    # duplicates must be suppressed even though wide boxes share many cells
+    assert len(got) == len(set(got))
+
+
+def test_bbox_self_join_edge_touch_counts(spark):
+    from raptor_service_spark.operators.bbox_join import bbox_self_join
+
+    rows = [
+        (0, 0.0, 10.0, 0.0, 10.0),
+        (1, 10.0, 20.0, 0.0, 10.0),   # touches box 0 along lat=10 edge
+        (2, 30.0, 40.0, 50.0, 60.0),  # disjoint
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, lat_lo double, lat_hi double, lng_lo double, lng_hi double"
+    )
+    got = sorted((r["id_a"], r["id_b"]) for r in bbox_self_join(df, res=6).collect())
+    assert got == [(0, 1)]
+
+
+def _sat_np(A, B):
+    # numpy twin of operators/polygon_join.sat_intersect_sql (CCW, closed)
+    def separated(P, Q):
+        for i in range(3):
+            p, q = P[i], P[(i + 1) % 3]
+            e = q - p
+            if all((e[0] * (r[1] - p[1]) - e[1] * (r[0] - p[0])) < 0 for r in Q):
+                return True
+        return False
+    return not separated(A, B) and not separated(B, A)
+
+
+def _ccw_tri(rng):
+    cx, cy = rng.uniform(-60, 60), rng.uniform(-60, 60)
+    a, b, c, d, e = rng.uniform(0.5, 6.0, 5)
+    return np.array([[cx, cy + a], [cx - b, cy - c], [cx + d, cy - e]])
+
+
+def test_triangle_self_join_matches_numpy_sat(spark):
+    from raptor_service_spark.operators.polygon_join import triangle_self_join
+
+    rng = np.random.default_rng(31)
+    tris = [_ccw_tri(rng) for _ in range(120)]
+    rows = [
+        (i, *(float(v) for p in t for v in p)) for i, t in enumerate(tris)
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, x1 double, y1 double, x2 double, y2 double, x3 double, y3 double"
+    )
+    got = sorted((r["id_a"], r["id_b"]) for r in triangle_self_join(df, res=5).collect())
+    want = sorted(
+        (i, j)
+        for i in range(len(tris))
+        for j in range(i + 1, len(tris))
+        if _sat_np(tris[i], tris[j])
+    )
+    assert got == want
+    assert got  # non-vacuous
+
+
+def test_triangle_self_join_containment_and_disjoint_bbox_overlap(spark):
+    from raptor_service_spark.operators.polygon_join import triangle_self_join
+
+    rows = [
+        # big triangle containing the small one (no edge crossings)
+        (0, 0.0, 10.0, -10.0, -10.0, 10.0, -10.0),
+        (1, 0.0, 1.0, -1.0, -1.0, 1.0, -1.0),
+        # bboxes overlap triangle 0's but the triangle itself is outside
+        # (tucked into the bbox corner past the hypotenuse-side edge)
+        (2, -9.8, 9.8, -9.9, 9.0, -9.0, 9.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, x1 double, y1 double, x2 double, y2 double, x3 double, y3 double"
+    )
+    got = sorted((r["id_a"], r["id_b"]) for r in triangle_self_join(df, res=6).collect())
+    tris = [np.array(r[1:]).reshape(3, 2) for r in rows]
+    want = sorted(
+        (i, j)
+        for i in range(3)
+        for j in range(i + 1, 3)
+        if _sat_np(tris[i], tris[j])
+    )
+    assert got == want
+    assert (0, 1) in got  # containment counts as intersecting
+
+
 def test_redact_pii_and_strip_markup(spark):
     from raptor_service_spark.functions.text import redact_pii, strip_markup
 

@@ -1,11 +1,13 @@
-"""K-ring smoothing, boundary cells and focal gradients
-(operators/neighborhood.py) and the within-distance join vs numpy brute force."""
+"""Spatial kNN join (operators/geo_knn.py) and k-ring smoothing
+(operators/neighborhood.py) vs numpy brute force."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from raptor_service_spark.geo.grid import RES_MULTIPLIER, cell_encode_np
+from raptor_service_spark.operators.geo_knn import geo_knn_join
 from raptor_service_spark.operators.neighborhood import kring_smooth
 
 
@@ -19,6 +21,51 @@ def _points_df(spark, n=400, seed=7):
         lat,
         lng,
     )
+
+
+QUERIES = {"qa": (10.0, 20.0), "qb": (-60.0, 150.0), "qc": (80.0, -170.0)}
+
+
+def _brute_topk(lat, lng, qla, qln, k):
+    d = np.round(np.sqrt((lat - qla) ** 2 + (lng - qln) ** 2), 6)
+    order = np.lexsort((np.arange(len(d)), d))[:k]
+    return [(int(i), float(d[i])) for i in order]
+
+
+@pytest.mark.parametrize("k", [1, 5, 17])
+def test_geo_knn_join_exact(spark, k):
+    df, lat, lng = _points_df(spark)
+    out = geo_knn_join(df, QUERIES, k=k, res=6, payload_cols=("pid",))
+    got = {
+        qid: sorted(
+            ((r["pid"], r["dist"]) for r in rows),
+            key=lambda t: (t[1], t[0]),
+        )
+        for qid, rows in _group(out.collect()).items()
+    }
+    for qid, (qla, qln) in QUERIES.items():
+        want = sorted(_brute_topk(lat, lng, qla, qln, k), key=lambda t: (t[1], t[0]))
+        assert got[qid] == want, qid
+
+
+def test_geo_knn_join_sparse_ring_expansion(spark):
+    # 6 points clustered far from the query: ring 0..n around the query cell
+    # are empty, so the planner must expand well past the first ring.
+    rows = [(i, 80.0 + i * 0.01, 170.0) for i in range(6)]
+    df = spark.createDataFrame(rows, "pid long, lat double, lng double")
+    out = geo_knn_join(df, {"q": (-80.0, -170.0)}, k=3, res=6, payload_cols=("pid",))
+    lat = np.array([r[1] for r in rows])
+    lng = np.array([r[2] for r in rows])
+    want = _brute_topk(lat, lng, -80.0, -170.0, 3)
+    got = sorted(((r["pid"], r["dist"]) for r in out.collect()), key=lambda t: (t[1], t[0]))
+    assert got == sorted(want, key=lambda t: (t[1], t[0]))
+
+
+def _group(rows):
+    out: dict[str, list] = {}
+    for r in rows:
+        out.setdefault(r["qid"], []).append(r)
+    return out
 
 
 def test_kring_smooth_matches_numpy(spark):
@@ -62,6 +109,85 @@ def test_kring_smooth_pole_clamp_and_wrap(spark):
         assert r["n_points"] == 1
         assert r["ring_points"] == 2  # sees itself + the wrapped neighbor
         assert r["n_ring_cells"] == 2
+
+
+def test_compact_cells_cover_and_minimality(spark):
+    from raptor_service_spark.geo.grid import RES_MULTIPLIER, cell_parent_np
+    from raptor_service_spark.operators.compact_cells import compact_cells
+
+    rng = np.random.default_rng(41)
+    res = 4
+    n = 1 << res
+    # dense-ish occupied set so full quads exist at several levels
+    occupied = sorted(
+        set(
+            int(res * RES_MULTIPLIER + y * n + x)
+            for x, y in zip(rng.integers(0, n, 900), rng.integers(0, n, 900))
+        )
+    )
+    df = spark.createDataFrame([(c,) for c in occupied], "cell long")
+    cover = [r["cell"] for r in compact_cells(df, res=res, min_res=1).collect()]
+
+    # 1. disjoint + exact cover: expanding every cover cell to res-4
+    #    descendants reproduces the occupied set exactly
+    expanded = []
+    for c in cover:
+        r = c // RES_MULTIPLIER
+        cells = [c]
+        for rr in range(r, res):
+            nxt = []
+            nn = 1 << (rr + 1)
+            for cc in cells:
+                rem = cc - rr * RES_MULTIPLIER
+                y, x = rem // (1 << rr), rem % (1 << rr)
+                for dy in (0, 1):
+                    for dx in (0, 1):
+                        nxt.append(
+                            (rr + 1) * RES_MULTIPLIER + (2 * y + dy) * nn + (2 * x + dx)
+                        )
+            cells = nxt
+        expanded.extend(cells)
+    assert sorted(expanded) == occupied
+    assert len(expanded) == len(set(expanded))
+
+    # 2. minimality: no complete sibling quad remains at any resolution > 1
+    from collections import Counter
+
+    by_res: dict[int, list[int]] = {}
+    for c in cover:
+        by_res.setdefault(int(c // RES_MULTIPLIER), []).append(c)
+    for r, cs in by_res.items():
+        if r <= 1:
+            continue
+        parents = Counter(int(p) for p in cell_parent_np(np.array(cs), r - 1))
+        assert max(parents.values()) < 4
+    assert len(cover) < len(occupied)  # actually compacted something
+
+
+def test_uncompact_inverts_compact(spark):
+    from raptor_service_spark.operators.compact_cells import (
+        compact_cells,
+        uncompact_cells_col,
+    )
+
+    rng = np.random.default_rng(43)
+    res = 5
+    n = 1 << res
+    occupied = sorted(
+        set(
+            int(res * RES_MULTIPLIER + y * n + x)
+            for x, y in zip(rng.integers(0, n, 2500), rng.integers(0, n, 2500))
+        )
+    )
+    df = spark.createDataFrame([(c,) for c in occupied], "cell long")
+    cover = compact_cells(df, res=res, min_res=0)
+    back = sorted(
+        r["c"]
+        for r in cover.select(
+            F.explode(uncompact_cells_col("cell", res)).alias("c")
+        ).collect()
+    )
+    assert back == occupied
 
 
 def test_within_distance_join_matches_bruteforce(spark):
@@ -198,3 +324,65 @@ def test_focal_gradient_matches_numpy_sobel(spark):
                     gy += dy * (2 - abs(dx)) * v
             want[base + y * n + x] = (int(raster[y, x]), gx, gy, gx * gx + gy * gy)
     assert got == want
+
+
+def test_nn_distances_exact_vs_brute_force(spark):
+    """Ring-doubling self-NN join vs numpy brute force, including a sparse
+    far-away outlier whose NN is many rings out."""
+    import numpy as np
+
+    from raptor_service_spark.operators.geo_knn import nn_distances
+
+    rng = np.random.default_rng(33)
+    # dense blob + thin scatter + isolated pair at the antipodes
+    xs = np.concatenate([rng.uniform(-1, 1, 300), rng.uniform(-170, 170, 60),
+                         np.array([150.0, 151.3])])
+    ys = np.concatenate([rng.uniform(-1, 1, 300), rng.uniform(-80, 80, 60),
+                         np.array([-75.0, -74.2])])
+    df = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(zip(xs, ys))],
+        "pid long, px double, py double",
+    )
+    got = {r.pid: r.d1 for r in nn_distances(df, res=5, max_ring=64).collect()}
+    dx = xs[:, None] - xs[None, :]
+    dy = ys[:, None] - ys[None, :]
+    dist = np.sqrt(dx * dx + dy * dy)
+    np.fill_diagonal(dist, np.inf)
+    want = dist.min(axis=1)
+    assert set(got) == set(range(len(xs)))
+    for i, w in enumerate(want):
+        assert got[i] == w  # bit-exact: same subtract/multiply/sqrt chain
+
+
+def test_nn_join_query_to_data_exact(spark):
+    """Query→data nn_join vs numpy brute force: sparse query grid against
+    a clustered data pattern (some queries resolve in ring 1, others need
+    many doublings), plus nn identity determinism."""
+    import numpy as np
+
+    from raptor_service_spark.operators.geo_knn import nn_join
+
+    rng = np.random.default_rng(41)
+    qx = np.linspace(-170, 170, 18)
+    qy = np.linspace(-80, 80, 18)
+    queries = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(zip(qx, qy))],
+        "pid long, px double, py double",
+    )
+    dx_ = np.concatenate([rng.uniform(-5, 5, 200), rng.uniform(100, 140, 30)])
+    dy_ = np.concatenate([rng.uniform(-5, 5, 200), rng.uniform(20, 60, 30)])
+    data = spark.createDataFrame(
+        [(int(i), float(x), float(y)) for i, (x, y) in enumerate(zip(dx_, dy_))],
+        "did long, dx double, dy double",
+    )
+    got = {r.pid: (r.d1, r.nn_id) for r in nn_join(
+        queries, data, res=4, max_ring=64
+    ).collect()}
+    dd = np.sqrt((qx[:, None] - dx_[None, :]) ** 2
+                 + (qy[:, None] - dy_[None, :]) ** 2)
+    assert set(got) == set(range(len(qx)))
+    for i in range(len(qx)):
+        best = dd[i].min()
+        assert got[i][0] == best  # bit-exact same arithmetic chain
+        # deterministic neighbor identity: smallest did among ties
+        assert got[i][1] == int(np.flatnonzero(dd[i] == best).min())

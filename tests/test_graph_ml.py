@@ -190,11 +190,7 @@ def test_polygon_metrics_unit_square():
     engine): area 1, perimeter 4, centroid at the center — pinning the
     formula strings' correctness independent of the fixtures."""
     import duckdb
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location("entry", "__spark_entry__.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    import offpaper_queries as mod
     sql = mod._polygon_metrics_sql()
     # swap the fixture VALUES for a unit square (lat, lng) CCW
     start = sql.index("(VALUES")

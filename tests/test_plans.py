@@ -14,6 +14,7 @@ import sys
 import pytest
 
 import __spark_entry__ as entry_mod
+import offpaper_queries
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 from lint_window_partitions import lint_query, partitionless_windows  # noqa: E402
@@ -27,7 +28,7 @@ def _plan(df) -> str:
 
 @pytest.fixture(scope="module")
 def qmap():
-    return entry_mod.queries()
+    return {**entry_mod.queries(), **offpaper_queries.queries()}
 
 
 def test_filtered_knn_pushes_predicate_and_prunes_columns(spark, qmap):
@@ -38,6 +39,13 @@ def test_filtered_knn_pushes_predicate_and_prunes_columns(spark, qmap):
     # documents scan reads only the needed columns, never text
     docs_scans = [s for s in plan.split("Scan parquet")[1:] if "documents" in s[:400]]
     assert docs_scans and all("text" not in s.split("ReadSchema")[1][:200] for s in docs_scans if "ReadSchema" in s)
+
+
+def test_revenue_joins_broadcast_dimensions(spark, qmap):
+    plan = _plan(qmap["revenue_by_nation"](spark, SF_DIR))
+    assert plan.count("BroadcastHashJoin") >= 3
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_rasterize_single_shuffle_grouped_map(spark, qmap):
@@ -87,6 +95,77 @@ def test_ordered_scan_is_take_ordered_not_global_sort(spark, qmap):
     assert plan.count("Exchange") == 0
 
 
+def test_sessions_filter_reaches_scan(spark, qmap):
+    plan = _plan(qmap["user_sessions"](spark, SF_DIR))
+    pushed = plan.split("PushedFilters")[1][:200] if "PushedFilters" in plan else ""
+    assert "LessThan(user_id,100)" in pushed
+
+
+def test_radius_join_broadcasts_cells(spark, qmap):
+    plan = _plan(qmap["radius_join_docs"](spark, SF_DIR))
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
+    """Pre-bucketing both join sides on the key removes BOTH exchanges from
+    the join plan (co-located join — the pay-the-shuffle-once layout)."""
+    from pyspark.sql import functions as F
+
+    from raptor_service_spark.io.bucketing import bucketed_join, write_bucketed
+
+    wh = str(tmp_path_factory.mktemp("warehouse"))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+            "doc_id", "lang"
+        )
+        emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+            F.col("vec_id").alias("doc_id"), "label"
+        )
+        write_bucketed(docs, "b_docs", "doc_id", n_buckets=8, path=wh + "/b_docs")
+        write_bucketed(emb, "b_emb", "doc_id", n_buckets=8, path=wh + "/b_emb")
+        joined = bucketed_join(spark, "b_docs", "b_emb", "doc_id")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        assert "Exchange" not in plan  # co-located: neither side shuffles
+        assert plan.count("Bucketed: true") == 2
+        # and it is still a correct join
+        assert joined.count() == docs.join(emb, "doc_id").count()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        spark.sql("DROP TABLE IF EXISTS b_docs")
+        spark.sql("DROP TABLE IF EXISTS b_emb")
+
+
+def test_stay_points_single_exchange(spark, qmap):
+    """Gaps-and-islands: both windows AND the run aggregate reuse ONE
+    user_id exchange (PLANS.md claim)."""
+    plan = _plan(qmap["user_stay_points"](spark, SF_DIR))
+    assert plan.count("Exchange") == 1
+    assert plan.count("Window") == 2
+
+
+def test_tile_topk_rank_cut_below_exchange(spark, qmap):
+    """Per-tile top-k: a Partial WindowGroupLimit bounds the shuffle at
+    <=3 rows per cell per map task."""
+    plan = _plan(qmap["tile_topk_docs"](spark, SF_DIR))
+    assert "WindowGroupLimit" in plan
+    first_wgl = plan.index("WindowGroupLimit")
+    assert "Partial" in plan[first_wgl:].split("\n")[0] or plan.count("WindowGroupLimit") == 2
+
+
+def test_traj_cells_explodes_after_shuffle(spark, qmap):
+    """The 9x interpolation Generate sits ABOVE the (single) exchange, so
+    the shuffle carries one row per event."""
+    plan = _plan(qmap["traj_cells"](spark, SF_DIR))
+    assert plan.count("Exchange") == 1
+    # executedPlan prints top-down: Generate must appear BEFORE Exchange
+    assert plan.index("Generate") < plan.index("Exchange")
+    assert "PushedFilters: [IsNotNull(user_id), LessThan(user_id,20)]" in plan
+
+
 def test_pq_knn_zero_shuffles_no_silent_codegen_fallback(spark, qmap):
     """PQ encode+ADC: no exchange anywhere. Round 4: the former
     array_position(ds, array_min(ds)) form carried a '*(1) Project'
@@ -104,10 +183,123 @@ def test_pq_knn_zero_shuffles_no_silent_codegen_fallback(spark, qmap):
     assert "zip_with" in plan  # the single-reference argmin form
 
 
+def test_heat_decay_partial_final_only(spark, qmap):
+    plan = _plan(qmap["cell_heat_decay"](spark, SF_DIR))
+    assert plan.count("Exchange") == 1
+    assert plan.count("HashAggregate") == 2
+
+
+def test_coverage_gap_broadcasts_doc_cells(spark, qmap):
+    plan = _plan(qmap["cell_coverage_gap"](spark, SF_DIR))
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert "SortMergeJoin" not in plan
+
+
+def test_zorder_layout_single_exchange_pure_codegen(spark, qmap):
+    """Morton interleave is a codegen Project: one partial+final agg, no
+    generator, no join."""
+    plan = _plan(qmap["zorder_layout"](spark, SF_DIR))
+    assert plan.count("Exchange") == 1
+    assert "Generate" not in plan and "Join" not in plan
+
+
+def test_hilbert_layout_single_exchange_pure_codegen(spark, qmap):
+    """The 8-level Hilbert rotate-reflect chain flattens into codegen
+    Projects: one partial+final agg, no generator, no join, no fallback."""
+    plan = _plan(qmap["hilbert_layout"](spark, SF_DIR))
+    assert plan.count("Exchange") == 1
+    assert "Generate" not in plan and "Join" not in plan
+    assert plan.count("HashAggregate") == 2  # partial + final
+
+
+def test_hex_density_agg_then_broadcast_peak(spark, qmap):
+    """Hex encode is a codegen Project; density is one partial+final agg;
+    the 1-row peak joins by broadcast — never a sort-merge join."""
+    plan = _plan(qmap["hex_density"](spark, SF_DIR))
+    assert "SortMergeJoin" not in plan
+    assert "Broadcast" in plan
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_gravity_fit_broadcast_pops_single_scalar_agg(spark, qmap):
+    """Both pop joins broadcast (the pop table is O(cells)); the ln
+    regressors are codegen Projects feeding ONE scalar aggregate."""
+    plan = _plan(qmap["gravity_fit"](spark, SF_DIR))
+    assert plan.count("BroadcastHashJoin") >= 2
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_colocation_no_cartesian_composite_key_join(spark, qmap):
+    """Contact join: candidates come from the (cell, bucket) equi-join —
+    never a cross product; the ring/bucket Generate feeds the join."""
+    plan = _plan(qmap["user_colocation"](spark, SF_DIR))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Generate" in plan
+    assert plan.count("Exchange") <= 3
+
+
+def test_stratified_sample_window_only_on_survivors(spark, qmap):
+    """The per-stratum rank window must consume the cutoff-filtered join
+    output (survivors), not the raw scan: top-down, the window appears
+    BEFORE (above) the broadcast cutoff join feeding it."""
+    plan = _plan(qmap["doc_stratified_sample"](spark, SF_DIR))
+    assert "BroadcastHashJoin" in plan
+    w = plan.index("Window")
+    assert plan.index("BroadcastHashJoin") > w  # join is below the window
+    assert "CartesianProduct" not in plan
+
+
+def test_morans_i_points_shuffle_once(spark, qmap):
+    """Autocorrelation: exactly one aggregate keyed by the raw point cell;
+    everything after runs on occupied-cell rows (ring join broadcastable)."""
+    plan = _plan(qmap["morans_i"](spark, SF_DIR))
+    assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
+    # the 1-row global-stats side is the only nested-loop join
+    assert plan.count("BroadcastNestedLoopJoin") <= 1
+
+
+def test_activity_mask_single_distinct_agg(spark, qmap):
+    plan = _plan(qmap["user_activity_mask"](spark, SF_DIR))
+    assert plan.count("Exchange") <= 2
+    assert "Join" not in plan
+
+
+def test_ripley_k_no_cartesian_one_pair_pass(spark, qmap):
+    """Pairs come from the grid ε-join (cell equi-join), never a cross
+    product; all bands fold into ONE aggregate over that stream."""
+    plan = _plan(qmap["ripley_k"](spark, SF_DIR))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan or plan.count("BroadcastNestedLoopJoin") <= 1  # the 1-row stats crossJoin only
+    assert plan.count("Generate") <= 2  # the 3x3 ring explode + band explode
+
+
+def test_mann_kendall_event_rows_shuffle_once(spark, qmap):
+    """Event rows are seen by exactly one exchange (the (cell, day) cube);
+    the day-pair join runs on aggregated rows only."""
+    plan = _plan(qmap["emerging_hotspots"](spark, SF_DIR))
+    ev_scans = plan.count("Scan parquet") and [
+        s for s in plan.split("Scan parquet")[1:] if "events" in s[:300]
+    ]
+    assert ev_scans  # reads events
+    assert "partial_count" in plan  # cube agg is map-side combinable
+    assert "CartesianProduct" not in plan
+
+
 def test_span_dedup_one_window_one_reassembly_agg(spark, qmap):
     plan = _plan(qmap["span_dedup"](spark, SF_DIR))
     assert plan.count("Window") == 1
     assert "FlatMapGroupsInPandas" not in plan  # reassembly is JVM collect_list
+    assert "CartesianProduct" not in plan
+
+
+def test_quadkey_rollup_groups_on_bigint_pair(spark, qmap):
+    """Quadkey strings are rendered after aggregation: the exchange key is
+    the (x, y) BIGINT pair, and string concat appears only above the agg."""
+    plan = _plan(qmap["quadkey_tiles"](spark, SF_DIR))
+    assert plan.count("Exchange") <= 2  # agg shuffle + final orderBy
+    assert "partial_count" in plan
     assert "CartesianProduct" not in plan
 
 
@@ -120,17 +312,32 @@ def test_curation_pipeline_single_scan_one_dedup_window(spark, qmap):
     assert "CartesianProduct" not in plan
 
 
+def test_local_moran_points_shuffle_once(spark, qmap):
+    plan = _plan(qmap["local_moran"](spark, SF_DIR))
+    # identical shape claim as morans_i: one partial+final count over points
+    assert "partial_count" in plan
+    assert "CartesianProduct" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
+
+
 def test_perplexity_never_doc_by_doc(spark, qmap):
     plan = _plan(qmap["doc_perplexity"](spark, SF_DIR))
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan  # top-20 never global-sorts
 
 
+def test_trajectory_simplify_one_window_shuffle(spark, qmap):
+    plan = _plan(qmap["trajectory_simplify"](spark, SF_DIR))
+    assert plan.count("Window") == 1
+    assert "CartesianProduct" not in plan
+
+
 # --------------------------------------------------------------------------
 # adversarial skew (round 3): 90%-one-cell corpora through the tree build's
 # salted two-phase collect and the ANN index writer — the forced-single-
 # cluster stall case of the reference (build_tree_service.py:109-114) at
-# skew, as PLAN-SHAPE and BOUND assertions.
+# skew, as PLAN-SHAPE and BOUND assertions, the way
+# test_bucketed_join_has_no_exchange pins bucketing.
 # --------------------------------------------------------------------------
 
 
@@ -285,6 +492,31 @@ def test_dup_substrings_one_hash_count_no_pairs(spark, qmap):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_dsir_feature_table_broadcasts(spark, qmap):
+    """The 256-row log-ratio table rides as a broadcast; the token stream
+    never self-joins."""
+    plan = _plan(qmap["dsir_weights"](spark, SF_DIR))
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_viterbi_is_relational_dp(spark, qmap):
+    """The Viterbi recursion is joins + hash aggregates — no Python kernel,
+    no cartesian, no per-user grouped-map."""
+    plan = _plan(qmap["viterbi_match"](spark, SF_DIR))
+    assert "CartesianProduct" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("HashAggregate") >= 10  # L-1 DP min-aggs, partial+final
+
+
+def test_cotravel_single_pair_window(spark, qmap):
+    plan = _plan(qmap["cotravel_pairs"](spark, SF_DIR))
+    assert "CartesianProduct" not in plan
+    assert plan.count("Window") >= 1
+    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan  # bucket equi-join
+
+
 def test_pip_polygon_table_distributed_polyfill(spark, qmap):
     """Polyfill runs as MapInPandas over polygon ROWS; the refine is codegen
     (no second Python stage); no cartesian anywhere."""
@@ -301,6 +533,26 @@ def test_gopher_c4_zero_shuffle(spark, qmap):
         plan = _plan(qmap[name](spark, SF_DIR))
         assert "Exchange" not in plan, name
         assert "BatchEvalPython" not in plan, name  # no row-at-a-time Python
+
+
+def test_st_dbscan_join_is_bucketed_in_time(spark, qmap):
+    """The ST-DBSCAN ε-join must key on (cell, time bucket), not cell
+    alone — the cell-only join materializes every same-cell pair across
+    the full history (measured 90 M intermediate rows for 1.1 M kept at
+    sf0.1) and is the shape that dies at 100 TB. The pair stream is
+    checkpointed inside the query, so the pin inspects the LAZY pair plan
+    via the shared builder."""
+    _, pairs = offpaper_queries._stdb_pair_stream(spark, SF_DIR)
+    plan = _plan(pairs)
+    assert "CartesianProduct" not in plan
+    # the equi-join keys on BOTH the ring cell and the time bucket
+    joins = [ln for ln in plan.splitlines() if "Join" in ln and "nbr" in ln]
+    assert joins and all("tbkt" in ln for ln in joins), joins
+    assert "BatchEvalPython" not in plan
+    # and the full query's post-checkpoint plan stays Python-free
+    full = _plan(qmap["st_dbscan"](spark, SF_DIR))
+    assert "CartesianProduct" not in full
+    assert "BatchEvalPython" not in full
 
 
 def test_multi_model_embed_single_arrow_pass(spark, qmap):
@@ -344,9 +596,10 @@ def test_window_lint_ignores_limit_off_the_window_lineage(spark):
 
 
 def test_term_topk_queries_take_ordered(spark, qmap):
-    """zipf_slope / source_delta / bpe_encode: the top-k over the O(vocab)
-    count table is orderBy+limit, never a full row_number window."""
-    for name in ("zipf_slope", "source_delta", "bpe_encode"):
+    """zipf_slope / source_delta / cms_heavy_hitters / bpe_encode: the
+    top-k over the O(vocab) count table is orderBy+limit, never a full
+    row_number window."""
+    for name in ("zipf_slope", "source_delta", "cms_heavy_hitters", "bpe_encode"):
         df = qmap[name](spark, SF_DIR)
         plan = _plan(df)
         assert "TakeOrderedAndProject" in plan, name
@@ -364,6 +617,34 @@ def test_seq_packing_two_phase_prefix_sum(spark, qmap):
     plan = _plan(df)
     # the per-row cumsum window is PARTITIONED by the md5-prefix bucket
     assert "Window" in plan and "windowspecdefinition(b#" in plan
+
+
+def test_two_phase_rank_queries_no_row_windows(spark, qmap):
+    """rfm_segments / ppcc_expon / ppcc_weibull / conversion_lag_quantiles:
+    global ranks are two-phase (bucketed); every remaining partition-less
+    window rides an aggregate or a checkpointed bounded table."""
+    for name in ("rfm_segments", "ppcc_expon", "ppcc_weibull",
+                 "conversion_lag_quantiles"):
+        kinds = _partitionless_window_kinds(qmap[name](spark, SF_DIR))
+        assert all(k in ("agg", "ckpt", "limit") for k in kinds), (name, kinds)
+
+
+def test_two_phase_row_number_matches_global(spark):
+    """_two_phase_row_number == row_number over the global order, for a
+    monotone bucket with in-bucket ties."""
+    from pyspark.sql import functions as F
+
+    rows = [(i, (i * 37) % 11, f"u{i:03d}") for i in range(500)]
+    df = spark.createDataFrame(rows, "rid int, v long, uid string")
+    got = {
+        r.rid: r.rn
+        for r in offpaper_queries._two_phase_row_number(
+            df, F.col("v"), [F.col("v"), F.col("uid")]
+        ).collect()
+    }
+    order = sorted(rows, key=lambda t: (t[1], t[2]))
+    for rank, (rid, _, _) in enumerate(order, start=1):
+        assert got[rid] == rank
 
 
 def test_always_gated_core_lint_clean(spark, qmap):

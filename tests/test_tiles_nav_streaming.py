@@ -1,9 +1,10 @@
-"""Tiles (raster<->vector round trip) and navigation ops."""
+"""Tiles (raster<->vector round trip), navigation ops, streaming parity."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from raptor_service_spark.datagen import gen_documents_df
 from raptor_service_spark.functions.vector import embed_spans
@@ -23,6 +24,11 @@ from raptor_service_spark.operators.tiles import (
     vectorize_tiles,
 )
 from raptor_service_spark.operators.tree import TreeParams, build_tile_tree
+from raptor_service_spark.streaming.events import (
+    run_stream_to_memory,
+    stream_events_from_dir,
+    windowed_event_stats,
+)
 
 # ------------------------------------------------------------------- tiles
 
@@ -113,6 +119,37 @@ def test_path_to_root(tree):
     assert (np.diff(path.level.values) > 0).all()
 
 
+# ---------------------------------------------------------------- streaming
+
+
+def test_streaming_matches_batch(spark, sf_dir, tmp_path):
+    import shutil
+
+    src = str(tmp_path / "events_src")
+    shutil.copytree(f"{sf_dir}/events.parquet", src) if False else None
+    # events.parquet is a single file; stage it into a directory source
+    import os
+
+    os.makedirs(src, exist_ok=True)
+    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/part-0.parquet")
+
+    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    expected = (
+        windowed_event_stats(batch)
+        .orderBy("window_start", "event_type")
+        .toPandas()
+    )
+
+    stream = stream_events_from_dir(spark, src)
+    assert stream.isStreaming
+    q = run_stream_to_memory(windowed_event_stats(stream), "evt_stats")
+    q.awaitTermination(120)
+    got = (
+        spark.table("evt_stats").orderBy("window_start", "event_type").toPandas()
+    )
+    assert got.equals(expected)
+
+
 def test_resize_media_plumbing(spark):
     """Resize: real average-pool over the real RLE codec; typed dims,
     decode-able output payloads, deterministic, partition-invariant."""
@@ -201,3 +238,48 @@ def test_sample_frames_plumbing(spark):
     one = out[out.media_ref == out.media_ref.iloc[0]].sort_values("frame_idx")
     assert len({bytes(p) for p in one.payload}) == 3
     assert abs(one.t_offset_sec.iloc[2] - 2 / 24.0) < 1e-12
+
+
+def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
+    """Watermarked stream-stream interval join == batch interval join."""
+    import os
+    import shutil
+
+    from raptor_service_spark.streaming.events import (
+        click_purchase_interval_join,
+        stream_events_from_dir,
+    )
+
+    src = str(tmp_path / "events_src2")
+    os.makedirs(src, exist_ok=True)
+    shutil.copy(f"{sf_dir}/events.parquet", f"{src}/part-0.parquet")
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    import pyspark.sql.functions as F
+
+    expected = (
+        click_purchase_interval_join(
+            ev.filter(F.col("event_type") == "purchase"),
+            ev.filter(F.col("event_type") == "click"),
+        )
+        .orderBy("purchase_id", "click_id")
+        .toPandas()
+    )
+
+    s = stream_events_from_dir(spark, src)
+    assert s.isStreaming
+    joined = click_purchase_interval_join(
+        s.filter(F.col("event_type") == "purchase"),
+        s.filter(F.col("event_type") == "click"),
+    )
+    q = (
+        joined.writeStream.format("memory")
+        .queryName("cp_join")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = spark.table("cp_join").orderBy("purchase_id", "click_id").toPandas()
+    assert len(got) > 0
+    assert got.equals(expected)
