@@ -51,7 +51,7 @@ def pack_batches(
     """Greedy prefix packing of item indices into request batches: each
     batch holds <= batch_size items and (when a budget is set) <=
     token_budget tokens — except a single oversized item still ships alone
-    (the `_budget_slice` >=1 rule, operators/tree.py:118)."""
+    (the `_budget_slice` >=1 rule in operators/tree.py)."""
     batches: list[list[int]] = []
     cur: list[int] = []
     cur_tok = 0

@@ -4,13 +4,10 @@ Replaces the reference's Voyage embedding client
 (/root/reference/services/providers/voyage/voyage_client.py:222-355) with a
 deterministic, hermetic hash-embedding (tests/bench), and pgvector's
 ``v <=> q`` cosine distance (/root/reference/repositories/retrieval_repo.py:271)
-with two kernels:
-
-  * ``cosine_sim_col`` — pure Spark SQL expression (zip_with + aggregate),
-    JVM-side, float64 accumulation in input order: bit-compatible with a
-    sequential-fold SQL oracle.
-  * ``CosineTopK`` via numpy inside pandas UDFs for the batch/matrix path
-    (Arrow transfer, BLAS dot) — the hot path for kNN at scale.
+with ``cosine_sim_col``: a pure Spark SQL expression (zip_with + aggregate),
+JVM-side, float64 accumulation in input order, bit-compatible with a
+sequential-fold SQL oracle. The batch/matrix path (Arrow transfer, one BLAS
+GEMM per batch) — the hot path for kNN at scale — lives in operators/knn.py.
 
 All UDFs are vectorized pandas/Arrow (input_hint: no per-row Python in the
 row-at-a-time sense; per-batch numpy only).
@@ -24,7 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, FloatType
+from pyspark.sql.types import ArrayType, FloatType
 
 from raptor_service_spark.schema import N_DIM
 
@@ -120,63 +117,6 @@ def cosine_dist_col(vec: Column, q: np.ndarray) -> Column:
     return F.lit(1.0) - cosine_sim_col(vec, q)
 
 
-def cosine_dist_udf(q: np.ndarray):
-    """Arrow-batched matrix kernel: batch of vectors vs one query.
-
-    float64 accumulation (SURVEY.md §7.4.1); BLAS matvec per Arrow batch.
-    Faster than the SQL expression for dim >= ~256.
-    """
-    q64 = np.asarray(q, dtype=np.float64)
-    qn = np.linalg.norm(q64)
-
-    @F.pandas_udf(DoubleType())
-    def _dist(vecs: pd.Series) -> pd.Series:
-        mat = np.array(vecs.tolist(), dtype=np.float64)
-        if mat.size == 0:
-            return pd.Series([], dtype=np.float64)
-        dots = mat @ q64
-        norms = np.linalg.norm(mat, axis=1)
-        return pd.Series(1.0 - dots / (norms * qn))
-
-    return _dist
-
-
-def pairwise_cosine_topk(
-    mat: np.ndarray, queries: np.ndarray, k: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Driver/UDF helper: top-k (indices, dists) per query row, ascending dist."""
-    mat = np.asarray(mat, dtype=np.float64)
-    queries = np.atleast_2d(np.asarray(queries, dtype=np.float64))
-    sim = (queries @ mat.T) / (
-        np.linalg.norm(queries, axis=1, keepdims=True) * np.linalg.norm(mat, axis=1)[None, :]
-    )
-    dist = 1.0 - sim
-    k = min(k, mat.shape[0])
-    idx = np.argpartition(dist, k - 1, axis=1)[:, :k]
-    row = np.arange(queries.shape[0])[:, None]
-    order = np.argsort(dist[row, idx], axis=1, kind="stable")
-    idx = idx[row, order]
-    return idx, dist[row, idx]
-
-
 def embed_spans(df, text_col: str = "text", out_col: str = "v", dim: int = N_DIM):
     """Attach deterministic embeddings to a span DataFrame (UDF 1, SURVEY §2.12)."""
     return df.withColumn(out_col, hash_embed_udf(dim)(F.col(text_col)))
-
-
-def mean_vector_udf(dim: int = N_DIM):
-    """Grouped-agg pandas UDF: elementwise mean of vectors (centroid).
-
-    Used for tile-node re-embedding aggregation when summaries are centroids.
-    """
-
-    @F.pandas_udf(ArrayType(FloatType()))
-    def mean_vec(v: pd.Series) -> list:
-        mat = np.array(v.tolist(), dtype=np.float64)
-        c = mat.mean(axis=0)
-        n = np.linalg.norm(c)
-        if n > 0:
-            c = c / n
-        return [float(x) for x in c.astype(np.float32)]
-
-    return mean_vec

@@ -285,6 +285,15 @@ def build_ann_index(
     )
 
 
+def _write_ann_index(
+    index: DataFrame, path: str, mode: str, npart: int | None, salts: int
+) -> None:
+    out = index
+    if npart:
+        out = out.repartition(npart, F.col("pfx"), F.pmod(F.xxhash64("id"), F.lit(salts)))
+    out.sortWithinPartitions("pfx", "ann_cell").write.mode(mode).partitionBy("pfx").parquet(path)
+
+
 def write_ann_index(
     index: DataFrame, path: str, npart: int | None = None, salts: int = 32
 ) -> None:
@@ -298,15 +307,7 @@ def write_ann_index(
     real cluster where shuffle bandwidth scales with executors; the salt
     spreads hot cells such as the empty-text mega-cell over ``salts``
     writers)."""
-    out = index
-    if npart:
-        out = out.repartition(npart, F.col("pfx"), F.pmod(F.xxhash64("id"), F.lit(salts)))
-    (
-        out.sortWithinPartitions("pfx", "ann_cell")
-        .write.mode("overwrite")
-        .partitionBy("pfx")
-        .parquet(path)
-    )
+    _write_ann_index(index, path, "overwrite", npart, salts)
 
 
 def append_ann_index(
@@ -320,15 +321,7 @@ def append_ann_index(
     union (candidate scans are layout-independent); callers must append
     NEW ids only — idempotent re-ingest goes through a catalog merge
     instead."""
-    out = new_index
-    if npart:
-        out = out.repartition(npart, F.col("pfx"), F.pmod(F.xxhash64("id"), F.lit(salts)))
-    (
-        out.sortWithinPartitions("pfx", "ann_cell")
-        .write.mode("append")
-        .partitionBy("pfx")
-        .parquet(path)
-    )
+    _write_ann_index(new_index, path, "append", npart, salts)
 
 
 def plan_candidate_cells(

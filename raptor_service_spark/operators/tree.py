@@ -42,12 +42,11 @@ NODE_COLS = ("tree_id", "node_id", "dataset_id", "level", "kind", "cell", "text"
 @dataclass
 class TreeParams:
     res_ladder: tuple[int, ...] = (8, 5, 2, 0)  # leaf res first, coarsening upward
-    max_levels: int = 10  # reference raptor_config.py:23
     summary_cap: int = 32  # hard count cap on children packed per summary
     # greedy token budget per summary group (analog of the reference's
     # 9500-token request packing, voyage_client.py:253-280), scaled to this
-    # corpus's ~10-word spans; None = count-cap only
-    summary_token_budget: int | None = 320
+    # corpus's ~10-word spans
+    summary_token_budget: int = 320
     summary_max_chars: int = 512  # reference summarizer max_tokens=512 analog
     salt_buckets: int = 16  # phase-1 salt fan-out for hot cells
     dim: int = N_DIM
@@ -115,15 +114,13 @@ def _leaf_nodes(spans: DataFrame, res_leaf: int) -> DataFrame:
     )
 
 
-def _budget_slice(items, cap: int, budget: int | None):
+def _budget_slice(items, cap: int, budget: int):
     """Longest ord-prefix of sorted ``items`` within ``cap`` children AND
     ``budget`` tokens (>= 1 item always, so an oversized single child still
     packs). Tokens are counted as max(token_cnt, 1), which also bounds the
     prefix length by ``budget`` — the count-slice below keeps the O(n^2)
     prefix-sum lambda on a bounded array even for hot cells."""
-    counted = F.slice(items, 1, cap if budget is None else min(cap, budget))
-    if budget is None:
-        return counted
+    counted = F.slice(items, 1, min(cap, budget))
     packed = F.filter(
         counted,
         lambda x, i: F.aggregate(
@@ -137,7 +134,7 @@ def _budget_slice(items, cap: int, budget: int | None):
 
 
 def _salted_capped_collect(
-    cur: DataFrame, cap: int, salt_buckets: int, token_budget: int | None = None
+    cur: DataFrame, cap: int, salt_buckets: int, token_budget: int
 ) -> DataFrame:
     """Two-phase skew-safe 'first children by ord' per (tree_id, parent_cell),
     greedily packed to ``token_budget`` tokens (reference voyage_client.py:
@@ -341,7 +338,7 @@ def _run_ladder(
     stats: list[dict] = []
     level = start_level
     cached = cur
-    while level < len(ladder) - 1 and n_cur > 1 and level < p.max_levels:
+    while level < len(ladder) - 1 and n_cur > 1:
         level += 1
         child_res, parent_res = ladder[level - 1], ladder[level]
         parents, edges, links, n_groups, forced = _ascend_one_level(
@@ -361,18 +358,22 @@ def _run_ladder(
     return level, stats
 
 
+def _leaves(spans: DataFrame, p: TreeParams) -> tuple[DataFrame, DataFrame]:
+    """Persisted level-0 leaves and their identity links (rank 0)."""
+    leaves = _leaf_nodes(spans, p.res_ladder[0]).persist()
+    links = leaves.select(
+        "tree_id", "node_id", "chunk_id", F.lit(0).alias("rank"), "dataset_id",
+        F.lit(0).alias("level"),
+    )
+    return leaves, links
+
+
 def build_tile_tree(spans_embedded: DataFrame, params: TreeParams | None = None) -> TileTree:
     """In-memory build (no checkpointing). ``spans_embedded`` columns: doc_id,
     dataset_id, idx, chunk_id, text, lat, lng, v."""
     p = params or TreeParams()
     spark = spans_embedded.sparkSession
-    leaves = _leaf_nodes(spans_embedded, p.res_ladder[0]).persist()
-    leaf_links = leaves.select(
-        "tree_id", "node_id", "chunk_id", F.lit(0).alias("rank"), "dataset_id",
-        F.lit(0).alias("level"),
-    )
-    n_leaves = leaves.count()
-
+    leaves, leaf_links = _leaves(spans_embedded, p)
     acc_nodes = [leaves.select(*NODE_COLS)]
     acc_edges: list[DataFrame] = []
     acc_links = [leaf_links]
@@ -383,7 +384,7 @@ def build_tile_tree(spans_embedded: DataFrame, params: TreeParams | None = None)
         acc_links.append(links)
         return links
 
-    top, stats = _run_ladder(leaves, leaf_links, 0, n_leaves, p, sink)
+    top, stats = _run_ladder(leaves, leaf_links, 0, leaves.count(), p, sink)
 
     nodes = acc_nodes[0]
     for d in acc_nodes[1:]:
@@ -403,6 +404,62 @@ def build_tile_tree(spans_embedded: DataFrame, params: TreeParams | None = None)
     return TileTree(nodes=nodes, edges=edges, links=links, levels=top, stats=stats)
 
 
+def _commit_level(catalog, prefix: str, level: int, nodes, edges, links, props=None) -> None:
+    """Append one level to the ``{prefix}_*`` tables: links, then edges (none
+    at level 0), then nodes. Nodes go last, so a level is complete iff its
+    nodes exist."""
+    props = {"level": level, **(props or {})}
+    catalog.append(f"{prefix}_links", links, props=props)
+    if edges is not None:
+        catalog.append(f"{prefix}_edges", edges, props=props)
+    catalog.append(f"{prefix}_nodes", nodes.select(*NODE_COLS), props=props)
+
+
+def _ascend_in_catalog(
+    catalog, prefix: str, p: TreeParams, cur, cur_links, start_level: int, props: dict
+) -> TileTree:
+    """Ascend from the cached frontier ``cur`` (level ``start_level``,
+    already committed), committing each level and reading its links back so
+    every cache can be released; then read the whole tree back."""
+    t_nodes, t_edges, t_links = f"{prefix}_nodes", f"{prefix}_edges", f"{prefix}_links"
+
+    def sink(level, parents, edges, links):
+        _commit_level(catalog, prefix, level, parents, edges, links, props)
+        return catalog.read(t_links).filter(F.col("level") == level)
+
+    top, stats = _run_ladder(cur, cur_links, start_level, cur.count(), p, sink, release=True)
+    edges = (
+        catalog.read(t_edges)
+        if catalog.exists(t_edges)  # a leaves-only tree has no edges table
+        else catalog.spark.createDataFrame(
+            [], "tree_id string, parent_id string, child_id string, level int"
+        )
+    )
+    return TileTree(
+        nodes=catalog.read(t_nodes), edges=edges, links=catalog.read(t_links),
+        levels=top, stats=stats,
+    )
+
+
+def _resume(catalog, prefix: str, p: TreeParams, top: int, props: dict) -> TileTree:
+    """Continue the ladder above the committed level ``top``: roll back the
+    edge and link rows above it (a crash can leave them without their
+    nodes), then ascend from its non-root nodes (a root never re-ascends, so
+    a complete tree's empty frontier ends the ladder at once)."""
+    for t in (f"{prefix}_edges", f"{prefix}_links"):
+        if catalog.exists(t):
+            catalog.delete_where(
+                t, f"level > {top}", props={"resume_cleanup": str(top), **props}
+            )
+    cur = (
+        catalog.read(f"{prefix}_nodes")
+        .filter((F.col("level") == top) & (F.col("kind") != "root"))
+        .persist()
+    )
+    cur_links = catalog.read(f"{prefix}_links").filter(F.col("level") == top)
+    return _ascend_in_catalog(catalog, prefix, p, cur, cur_links, top, props)
+
+
 def ingest_incremental(
     new_spans_embedded: DataFrame,
     catalog,
@@ -414,9 +471,10 @@ def ingest_incremental(
     leaves, recompute ONLY the level-1 cells they land in (the filter on the
     leaf table is a partition predicate on a cell-partitioned layout — old
     leaves in clean cells are never read), then rebuild the upper ladder
-    (levels >= 2) from the merged level 1. Upper levels shrink 4^dres per
-    step, so they are a vanishing fraction of the corpus; the expensive
-    stage — leaves -> level 1 — is the one that stays incremental.
+    (levels >= 2) by resuming the checkpointed build from the merged level
+    1. Upper levels shrink 4^dres per step, so they are a vanishing fraction
+    of the corpus; the expensive stage — leaves -> level 1 — is the one that
+    stays incremental. ``stats`` holds the rebuilt levels (>= 2).
 
     The result is IDENTICAL to a full rebuild over the union corpus
     (pytest-pinned): node ids are deterministic per (tree, level, cell) and
@@ -430,15 +488,11 @@ def ingest_incremental(
     p = params or TreeParams()
     t_nodes, t_edges, t_links = f"{prefix}_nodes", f"{prefix}_edges", f"{prefix}_links"
     ladder = list(p.res_ladder)
+    ingest = {"op": "ingest"}
 
     # 1. append new leaves + identity links at level 0
-    leaves_new = _leaf_nodes(new_spans_embedded, ladder[0]).persist()
-    links_new = leaves_new.select(
-        "tree_id", "node_id", "chunk_id", F.lit(0).alias("rank"), "dataset_id",
-        F.lit(0).alias("level"),
-    )
-    catalog.append(t_links, links_new, props={"level": 0, "op": "ingest"})
-    catalog.append(t_nodes, leaves_new.select(*NODE_COLS), props={"level": 0, "op": "ingest"})
+    leaves_new, links_new = _leaves(new_spans_embedded, p)
+    _commit_level(catalog, prefix, 0, leaves_new, None, links_new, ingest)
 
     # 2. dirty level-1 cells = parents of the new leaves (small driver list)
     dirty = [
@@ -474,23 +528,22 @@ def ingest_incremental(
     dirty_cells = parents.select("cell").distinct()
     pids = parents.select("node_id")
     catalog.delete_matching(t_nodes, dirty_cells, ["cell"],
-                            extra_predicate="level = 1", props={"op": "ingest"})
-    catalog.append(t_nodes, parents.select(*NODE_COLS), props={"level": 1, "op": "ingest"})
+                            extra_predicate="level = 1", props=ingest)
+    catalog.append(t_nodes, parents.select(*NODE_COLS), props={"level": 1, **ingest})
     if catalog.exists(t_edges):
         catalog.delete_matching(
             t_edges, pids.withColumnRenamed("node_id", "parent_id"),
-            ["parent_id"], extra_predicate="level = 1", props={"op": "ingest"})
-    catalog.append(t_edges, edges, props={"level": 1, "op": "ingest"})
+            ["parent_id"], extra_predicate="level = 1", props=ingest)
+    catalog.append(t_edges, edges, props={"level": 1, **ingest})
     catalog.delete_matching(t_links, pids, ["node_id"],
-                            extra_predicate="level = 1", props={"op": "ingest"})
-    catalog.append(t_links, links, props={"level": 1, "op": "ingest"})
+                            extra_predicate="level = 1", props=ingest)
+    catalog.append(t_links, links, props={"level": 1, **ingest})
     leaves_dirty.unpersist()
     lvl1_dirty.unpersist()
 
-    # 5. rebuild levels >= 2 from the merged level 1 (tiny tables)
-    for t in (t_edges, t_links, t_nodes):
-        if catalog.exists(t):
-            catalog.delete_where(t, "level >= 2", props={"op": "ingest"})
+    # 5. rebuild levels >= 2 from the merged level 1 (tiny tables). Their
+    # nodes go first, so level 1 is the committed top a resume continues from.
+    catalog.delete_where(t_nodes, "level >= 2", props=ingest)
     lvl1 = catalog.read(t_nodes).filter(F.col("level") == 1)
     # per-tree root promotion at level 1 (matches _ascend_one_level): a tree
     # whose level 1 collapsed to one group roots there and leaves the
@@ -505,33 +558,9 @@ def ingest_incremental(
             t_nodes,
             changed.withColumn("kind", F.col("new_kind")).drop("new_kind"),
             ["node_id"],
-            props={"op": "ingest"},
+            props=ingest,
         )
-    active = (
-        catalog.read(t_nodes)
-        .filter((F.col("level") == 1) & (F.col("kind") != "root"))
-        .persist()
-    )
-    links1 = catalog.read(t_links).filter(F.col("level") == 1)
-
-    def sink(level, parents_l, edges_l, links_l):
-        catalog.append(t_links, links_l, props={"level": level, "op": "ingest"})
-        catalog.append(t_edges, edges_l, props={"level": level, "op": "ingest"})
-        catalog.append(t_nodes, parents_l.select(*NODE_COLS), props={"level": level, "op": "ingest"})
-        return catalog.read(t_links).filter(F.col("level") == level)
-
-    top, _ = _run_ladder(active, links1, 1, active.count(), p, sink, release=True)
-
-    spark = new_spans_embedded.sparkSession
-    nodes = catalog.read(t_nodes)
-    edges = (
-        catalog.read(t_edges)
-        if catalog.exists(t_edges)
-        else spark.createDataFrame(
-            [], "tree_id string, parent_id string, child_id string, level int"
-        )
-    )
-    return TileTree(nodes=nodes, edges=edges, links=catalog.read(t_links), levels=top)
+    return _resume(catalog, prefix, p, 1, ingest)
 
 
 def build_tile_tree_checkpointed(
@@ -548,48 +577,9 @@ def build_tile_tree_checkpointed(
     rolled back with a copy-on-write delete).
     """
     p = params or TreeParams()
-    t_nodes, t_edges, t_links = f"{prefix}_nodes", f"{prefix}_edges", f"{prefix}_links"
-
-    def sink(level, parents, edges, links):
-        catalog.append(t_links, links, props={"level": level})
-        catalog.append(t_edges, edges, props={"level": level})
-        catalog.append(t_nodes, parents.select(*NODE_COLS), props={"level": level})
-        return catalog.read(t_links).filter(F.col("level") == level)
-
-    if resume and catalog.exists(t_nodes):
-        nodes = catalog.read(t_nodes)
-        top = nodes.agg(F.max("level")).collect()[0][0]
-        # roll back partial levels above the last complete one
-        for t in (t_edges, t_links):
-            if catalog.exists(t):
-                catalog.delete_where(t, f"level > {top}", props={"resume_cleanup": str(top)})
-        # a complete tree's root never re-ascends (empty cur ends the ladder)
-        cur = nodes.filter(
-            (F.col("level") == top) & (F.col("kind") != "root")
-        ).persist()
-        cur_links = catalog.read(t_links).filter(F.col("level") == top)
-        n_cur = cur.count()
-        start_level = int(top)
-    else:
-        leaves = _leaf_nodes(spans_embedded, p.res_ladder[0]).persist()
-        leaf_links = leaves.select(
-            "tree_id", "node_id", "chunk_id", F.lit(0).alias("rank"), "dataset_id",
-            F.lit(0).alias("level"),
-        )
-        catalog.append(t_links, leaf_links, props={"level": 0})
-        catalog.append(t_nodes, leaves.select(*NODE_COLS), props={"level": 0})
-        cur, cur_links, n_cur, start_level = leaves, leaf_links, leaves.count(), 0
-
-    top, stats = _run_ladder(cur, cur_links, start_level, n_cur, p, sink, release=True)
-
-    spark = spans_embedded.sparkSession
-    nodes = catalog.read(t_nodes)
-    edges = (
-        catalog.read(t_edges)
-        if catalog.exists(t_edges)
-        else spark.createDataFrame(
-            [], "tree_id string, parent_id string, child_id string, level int"
-        )
-    )
-    links = catalog.read(t_links)
-    return TileTree(nodes=nodes, edges=edges, links=links, levels=top, stats=stats)
+    if resume and catalog.exists(f"{prefix}_nodes"):
+        top = catalog.read(f"{prefix}_nodes").agg(F.max("level")).collect()[0][0]
+        return _resume(catalog, prefix, p, int(top), {})
+    leaves, leaf_links = _leaves(spans_embedded, p)
+    _commit_level(catalog, prefix, 0, leaves, None, leaf_links)
+    return _ascend_in_catalog(catalog, prefix, p, leaves, leaf_links, 0, {})

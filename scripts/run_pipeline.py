@@ -107,6 +107,7 @@ def main() -> None:
         metrics["ingest_delta_docs"] = args.ingest_delta
         metrics["ingest_sec"] = round(_time.perf_counter() - t0, 3)
         metrics["tree_levels_after_ingest"] = tree.levels
+        metrics["tree_level_stats_after_ingest"] = tree.stats
         metrics["ingest_lineage_tail"] = cat.snapshots("tree_nodes")[-3:]
 
     print(json.dumps(metrics, default=str))

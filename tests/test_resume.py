@@ -199,6 +199,24 @@ def test_ingest_incremental_multi_dataset(spark, tmp_path):
     assert sorted(r.dataset_id for r in roots) == ["ds-74", "ds-75"]
 
 
+def test_ingest_incremental_reports_upper_level_stats(spark, tmp_path):
+    """Ingest rebuilds levels >= 2 through the checkpointed build's resume
+    path, so its stats are exactly a full rebuild's stats above level 1."""
+    from raptor_service_spark.operators.tree import ingest_incremental
+
+    a = _spans_for(spark, 30, seed=70)
+    b = _spans_for(spark, 12, seed=71)
+
+    cat = SnapshotCatalog(str(tmp_path / "cat_stats"), spark)
+    build_tile_tree_checkpointed(a, PARAMS, catalog=cat, prefix="t", resume=False)
+    inc = ingest_incremental(b, cat, PARAMS, prefix="t")
+
+    full = build_tile_tree(a.unionByName(b), PARAMS)
+    assert inc.stats == [s for s in full.stats if s["level"] >= 2]
+    assert inc.stats  # the ladder really climbed above level 1
+    assert inc.levels == full.levels
+
+
 def test_checkpointed_build_and_ingest_release_their_cache(spark, tmp_path):
     """A checkpointed build plus one ingest leave no persisted RDD behind:
     every level is released once the next level has read it."""
