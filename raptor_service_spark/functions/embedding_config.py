@@ -10,9 +10,10 @@ Scale posture: the model registry is O(models) driver state; per-row routing
 happens inside one ``mapInPandas`` pass (rows grouped by model per Arrow
 batch, one vectorized XOF kernel call per group) — mixed-model corpora cost
 one scan, not one scan per model. Downstream kNN/dedup joins MUST key on
-(model, …): vectors of different dims never compare (enforced by
-``assert_same_model`` in the kNN helpers' contract and pinned in
-tests/test_ann_index.py::test_multi_model_dims).
+(model, …): vectors of different dims never compare. No run-time check
+enforces that; it is the caller's contract. tests/test_ivf.py::test_multi_model_embed_by_model pins
+each row's width to its model, and the ``multi_model_dims`` query audits
+per-model width uniformity against its oracle.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, StructField, StructType
 
-from raptor_service_spark.functions.vector import hash_embed_np, hash_embed_udf
+from raptor_service_spark.functions.vector import hash_embed_np
 from raptor_service_spark.schema import N_DIM
 
 # model -> output dim (reference embedding_config.py:22-28 posture)
@@ -44,11 +45,6 @@ def model_dim(model: str) -> int:
             f"unknown embedding model {model!r}; registered: "
             f"{sorted(EMBEDDING_MODEL_DIMS)}"
         ) from None
-
-
-def embed_udf_for(model: str):
-    """Single-model Arrow embed UDF at the model's configured dim."""
-    return hash_embed_udf(model_dim(model))
 
 
 def embed_by_model(

@@ -10,21 +10,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def clean_summary(text: Column) -> Column:
-    """Strip a leading 'Summary:' prefix (reference /root/reference/utils/regex.py:4-5)."""
-    return F.regexp_replace(text, r"(?i)^\s*summary:\s*", "")
-
-
-def checksum_sha256(text: Column) -> Column:
-    """Document checksum (reference services/document/persist_document.py:33)."""
-    return F.sha2(text, 256)
-
-
-def leaf_node_id(tree_id: Column, idx: Column) -> Column:
-    """'{tree_id}::leaf::{idx:06d}' (reference utils/render_id.py:17-18)."""
-    return F.format_string("%s::leaf::%06d", tree_id, idx)
-
-
 def chunk_id(doc_id: Column, idx: Column) -> Column:
     """'{doc_id}::c{i}' (reference services/document/chunk_service.py:27)."""
     return F.format_string("%s::c%d", doc_id, idx)
@@ -112,15 +97,6 @@ def normalize_query_sql(
         f"CASE WHEN {n} <= {soft_cap} THEN {expr} "
         f"WHEN {n} <= {hard_cap} THEN substring({expr}, 1, {trunc}) "
         f"ELSE NULL END"
-    )
-
-
-def enumerate_docs_prompt(texts: Column) -> Column:
-    """'[#i] text' prompt assembly over an array<string> column
-    (reference services/clustering/summarizer.py:93-101)."""
-    return F.concat_ws(
-        "\n\n",
-        F.transform(texts, lambda t, i: F.concat(F.lit("[#"), (i + 1).cast("string"), F.lit("] "), t)),
     )
 
 

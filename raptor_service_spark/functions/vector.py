@@ -87,11 +87,6 @@ def hash_embed_udf(dim: int = N_DIM):
 # ---------------------------------------------------------------------------
 
 
-def l2_normalize_col(vec: Column) -> Column:
-    norm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x))
-    return F.transform(vec, lambda x: (x / norm).cast("float"))
-
-
 def cosine_sim_col(vec: Column, q: np.ndarray) -> Column:
     """JVM-side cosine similarity of a vector column against a literal query.
 

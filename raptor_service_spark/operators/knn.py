@@ -21,20 +21,65 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from raptor_service_spark.functions.vector import cosine_dist_col
-from raptor_service_spark.geo.grid import cell_encode_col, kring_np
+from raptor_service_spark.functions.vector import cosine_dist_col, hash_embed_np
+from raptor_service_spark.geo.grid import (
+    RES_MULTIPLIER,
+    cell_encode_col,
+    cell_encode_np,
+    cell_encode_sql,
+    cell_parent_np,
+    kring_np,
+)
+
+# Seeds the 2-D projection basis. Part of the stored index format: every
+# ann_cell written by build_ann_index and every query's probed cells derive
+# from it, and the oracle SQL embeds its basis as literals.
+PROJECTION_SEED = 4242
+# Ring planner: widen the query's k-ring (1, 2, 4, ... MAX_RING) until the
+# rings hold k * MIN_CANDIDATES_FACTOR rows; past MAX_RING scan everything.
+MIN_CANDIDATES_FACTOR = 32
+MAX_RING = 8
+_RINGS = tuple(1 << i for i in range(MAX_RING.bit_length()))
+ANN_PFX_RES = 3  # 64 coarse directories for the partitioned index layout
 
 
-def _projection_basis(dim: int, seed: int = 4242) -> np.ndarray:
-    rng = np.random.default_rng([seed, dim])
+def _projection_basis(dim: int) -> np.ndarray:
+    rng = np.random.default_rng([PROJECTION_SEED, dim])
     b = rng.standard_normal((2, dim))
     return b / np.linalg.norm(b, axis=1, keepdims=True)
 
 
-def projected_cell_sql(vec_expr: str, res: int, dim: int, seed: int = 4242) -> str:
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; all-zero rows stay zero."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return mat / norms
+
+
+def _cell_counts(df_with_cell: DataFrame) -> dict[int, int]:
+    """Occupancy histogram ``ann_cell -> rows``: the ring planner's statistic."""
+    return {
+        r["ann_cell"]: r["cnt"]
+        for r in df_with_cell.groupBy("ann_cell").agg(F.count("*").alias("cnt")).collect()
+    }
+
+
+def _top_k_per_qid(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Global top-k per ``qid`` over locally pre-cut candidates, ordered by
+    (round(dist, 9), id) like brute_force_knn."""
+    w = Window.partitionBy("qid").orderBy(F.round(F.col("dist"), 9).asc(), F.col(id_col).asc())
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+def _query_cell(q: np.ndarray, res: int) -> int:
+    qlat, qlng = project_to_latlng_np(np.asarray(q, dtype=np.float64)[None, :])
+    return int(cell_encode_np(qlat, qlng, res)[0])
+
+
+def projected_cell_sql(vec_expr: str, res: int, dim: int) -> str:
     """ANSI-SQL (DuckDB-runnable) twin of ``with_projected_cell``'s bucket id.
 
     Emits the identical float64 pipeline as ``project_to_latlng_np`` +
@@ -44,9 +89,7 @@ def projected_cell_sql(vec_expr: str, res: int, dim: int, seed: int = 4242) -> s
     cell mismatches at sf0.001 and sf0.01). SQL-side arithmetic is pure
     float64; the only parity risk is a projected coordinate landing within
     ~1 ulp of a cell edge, which the fixed test corpora do not contain."""
-    from raptor_service_spark.geo.grid import cell_encode_sql
-
-    basis = _projection_basis(dim, seed)
+    basis = _projection_basis(dim)
     norm = (
         "sqrt("
         + " + ".join(
@@ -66,7 +109,7 @@ def projected_cell_sql(vec_expr: str, res: int, dim: int, seed: int = 4242) -> s
     return cell_encode_sql(lat, lng, res)
 
 
-def project_to_latlng_np(mat: np.ndarray, seed: int = 4242) -> tuple[np.ndarray, np.ndarray]:
+def project_to_latlng_np(mat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic 2-D hash-projection of embeddings onto the lat/lng domain.
 
     Cosine-similar vectors project to nearby points (random-projection LSH
@@ -81,11 +124,7 @@ def project_to_latlng_np(mat: np.ndarray, seed: int = 4242) -> tuple[np.ndarray,
     normal CDF — a monotonic map, so neighborhoods are preserved — yielding
     near-uniform bucket occupancy across the grid."""
     mat = np.asarray(mat, dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    unit = mat / norms
-    basis = _projection_basis(mat.shape[1], seed)
-    p = unit @ basis.T  # concentrated ~N(0, 1/dim)
+    p = _unit_rows(mat) @ _projection_basis(mat.shape[1]).T  # concentrated ~N(0, 1/dim)
     z = p * np.sqrt(mat.shape[1])
     u = 1.0 / (1.0 + np.exp(-1.702 * z))  # logistic approx of Phi(z), in (0,1)
     lat = np.clip((u[:, 0] * 2.0 - 1.0) * 85.0, -89.9, 89.9)
@@ -93,16 +132,14 @@ def project_to_latlng_np(mat: np.ndarray, seed: int = 4242) -> tuple[np.ndarray,
     return lat, lng
 
 
-def with_projected_cell(
-    df: DataFrame, vec_col: str = "v", res: int = 6, seed: int = 4242
-) -> DataFrame:
+def with_projected_cell(df: DataFrame, vec_col: str = "v", res: int = 6) -> DataFrame:
     """Attach the ANN bucket cell to a vector DataFrame (Arrow-batched)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf):
                 mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                lat, lng = project_to_latlng_np(mat, seed)
+                lat, lng = project_to_latlng_np(mat)
                 pdf = pdf.assign(_plat=lat, _plng=lng)
             else:
                 pdf = pdf.assign(_plat=pd.Series(dtype=float), _plng=pd.Series(dtype=float))
@@ -168,9 +205,7 @@ def brute_force_knn_multi(
             if not len(pdf):
                 continue
             mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            sim = (mat / norms[:, None]) @ qmat_n.T  # (batch, nq)
+            sim = _unit_rows(mat) @ qmat_n.T  # (batch, nq)
             dist = 1.0 - sim
             kk = min(k, len(pdf))
             out_frames = []
@@ -186,12 +221,7 @@ def brute_force_knn_multi(
         f"{f.name} {f.dataType.simpleString()}" for f in df.select(*cols).schema.fields
     )
     local = df.mapInPandas(gen, schema=f"{fields}, qid string, dist double")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.round(F.col("dist"), 9).asc(), F.col(id_col).asc())
-    return (
-        local.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
-    )
+    return _top_k_per_qid(local, k, id_col)
 
 
 def grid_knn(
@@ -199,12 +229,9 @@ def grid_knn(
     q: np.ndarray,
     k: int,
     res: int = 6,
-    seed: int = 4242,
     vec_col: str = "v",
     payload_cols: tuple[str, ...] = (),
     id_col: str = "id",
-    min_candidates_factor: int = 32,
-    max_ring: int = 8,
 ) -> DataFrame:
     """Grid-compacted ANN: k-ring candidate pruning + exact cosine re-rank.
 
@@ -216,21 +243,12 @@ def grid_knn(
     count-job-per-ring probe loop; recall measured in tests vs brute force.
     """
     q = np.asarray(q, dtype=np.float64)
-    cell_counts = {
-        r["ann_cell"]: r["cnt"]
-        for r in df_with_cell.groupBy("ann_cell").agg(F.count("*").alias("cnt")).collect()
-    }
-    cells = plan_candidate_cells(
-        cell_counts, q, k, res, seed, min_candidates_factor, max_ring
-    )
+    cells = plan_candidate_cells(_cell_counts(df_with_cell), q, k, res)
     if cells is None:  # sparse table: degrade to exact full scan
         cand = df_with_cell
     else:
         cand = df_with_cell.filter(F.col("ann_cell").isin(cells))
     return brute_force_knn(cand, q, k, vec_col, payload_cols, id_col)
-
-
-ANN_PFX_RES = 3  # 64 coarse directories for the partitioned index layout
 
 
 def build_ann_index(
@@ -239,8 +257,6 @@ def build_ann_index(
     id_col: str = "id",
     dim: int = 64,
     res: int = 4,
-    seed: int = 4242,
-    pfx_res: int = ANN_PFX_RES,
     rounds: int = 1,
     vec_dtype: str = "<f4",
 ) -> DataFrame:
@@ -250,7 +266,7 @@ def build_ann_index(
       * ``v`` is the little-endian float32 byte packing of the vector —
         parquet decodes a flat binary column far faster than list<float>,
         and the scoring kernel rebuilds the matrix with one ``frombuffer``;
-      * ``pfx`` is the coarse parent cell (res ``pfx_res``) used as the
+      * ``pfx`` is the coarse parent cell (res ``ANN_PFX_RES``) used as the
         table's directory-partition column so query rings prune whole
         partitions (Iceberg partition transform at real scale).
 
@@ -260,15 +276,12 @@ def build_ann_index(
     stats make the residual ``ann_cell`` predicate skip within partitions.
     Fusing the three kernels into one ``mapInPandas`` avoids re-shipping the
     vector column between Python stages."""
-    from raptor_service_spark.functions.vector import hash_embed_np
-    from raptor_service_spark.geo.grid import cell_encode_np, cell_parent_np
-
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = hash_embed_np(pdf[text_col], dim, rounds=rounds)
-            lat, lng = project_to_latlng_np(mat, seed)
+            lat, lng = project_to_latlng_np(mat)
             cells = cell_encode_np(lat, lng, res)
             packed = np.ascontiguousarray(mat, dtype=vec_dtype)
             yield pd.DataFrame(
@@ -276,7 +289,7 @@ def build_ann_index(
                     "id": pdf["id"].astype(str).to_numpy(),
                     "v": [row.tobytes() for row in packed],
                     "ann_cell": cells.astype(np.int64),
-                    "pfx": cell_parent_np(cells, pfx_res).astype(np.int64),
+                    "pfx": cell_parent_np(cells, ANN_PFX_RES).astype(np.int64),
                 }
             )
 
@@ -329,28 +342,19 @@ def plan_candidate_cells(
     q: np.ndarray,
     k: int,
     res: int,
-    seed: int = 4242,
-    min_candidates_factor: int = 32,
-    max_ring: int = 8,
 ) -> list[int] | None:
     """Driver-side ring planner from tile-occupancy stats (SURVEY §4.2 #1).
 
     Expands the k-ring around the query's bucket until the summed occupancy
-    covers ``k * min_candidates_factor`` — zero Spark jobs; the histogram is
+    covers ``k * MIN_CANDIDATES_FACTOR`` — zero Spark jobs; the histogram is
     tiny (bounded by 4^res cells). Returns None when the table is too sparse,
     meaning: scan everything (exact fallback)."""
-    from raptor_service_spark.geo.grid import cell_encode_np
-
-    q = np.asarray(q, dtype=np.float64)
-    qlat, qlng = project_to_latlng_np(q[None, :], seed)
-    qcell = int(cell_encode_np(qlat, qlng, res)[0])
-    target = max(k * min_candidates_factor, k)
-    ring = 1
-    while ring <= max_ring:
+    qcell = _query_cell(q, res)
+    target = max(k * MIN_CANDIDATES_FACTOR, k)
+    for ring in _RINGS:
         cells = [int(c) for c in kring_np(qcell, ring)]
         if sum(cell_counts.get(c, 0) for c in cells) >= target:
             return cells
-        ring *= 2
     return None
 
 
@@ -360,9 +364,6 @@ def grid_knn_sql(
     k: int,
     res: int,
     dim: int,
-    seed: int = 4242,
-    min_candidates_factor: int = 32,
-    max_ring: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> str:
@@ -373,22 +374,15 @@ def grid_knn_sql(
     The planner is replicated relationally: per-cell occupancy, wrapped
     Chebyshev ring distance to the query's cell (lng wraps mod n, lat is
     in-bounds by construction — kring_np semantics), smallest ring in
-    (1,2,4,8) whose occupancy sum reaches ``k*factor``, NULL -> full scan."""
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER, cell_encode_np
-
+    ``_RINGS`` whose occupancy sum reaches ``k * MIN_CANDIDATES_FACTOR``,
+    NULL -> full scan."""
     q = np.asarray(q, dtype=np.float64)
-    qlat, qlng = project_to_latlng_np(q[None, :], seed)
-    qcell = int(cell_encode_np(qlat, qlng, res)[0])
+    qcell = _query_cell(q, res)
     n = 1 << res
     rem = qcell - res * RES_MULTIPLIER
     qy, qx = rem // n, rem % n
-    target = max(k * min_candidates_factor, k)
-    rings = []
-    r = 1
-    while r <= max_ring:
-        rings.append(f"({r})")
-        r *= 2
-    cell = projected_cell_sql(vec_col, res, dim, seed)
+    target = max(k * MIN_CANDIDATES_FACTOR, k)
+    cell = projected_cell_sql(vec_col, res, dim)
     qsql = "[" + ", ".join(f"{x:.6f}" for x in q) + "]"
     dist = f"(1.0 - list_cosine_similarity(v, {qsql}))"
     return f"""
@@ -408,7 +402,7 @@ def grid_knn_sql(
             FROM base GROUP BY 1
         ),
         chosen AS (
-            SELECT MIN(r) AS ring FROM (VALUES {", ".join(rings)}) rings(r)
+            SELECT MIN(r) AS ring FROM (VALUES {", ".join(f"({r})" for r in _RINGS)}) rings(r)
             WHERE (SELECT COALESCE(SUM(c), 0) FROM occ WHERE cheb <= r) >= {target}
         )
         SELECT id, ROUND({dist}, 6) AS dist
@@ -427,10 +421,7 @@ def grid_knn_multi(
     qids: list[str],
     k: int,
     res: int = 4,
-    seed: int = 4242,
-    min_candidates_factor: int = 32,
     cell_counts: dict[int, int] | None = None,
-    pfx_res: int = ANN_PFX_RES,
     vec_dtype: str = "<f4",
 ) -> DataFrame:
     """Grid-compacted kNN for MANY queries in two jobs total.
@@ -449,22 +440,15 @@ def grid_knn_multi(
     high query counts. Output: (qid, id, dist), top-k per qid. ``index``
     must carry (id, v binary-f32, ann_cell, pfx) — see build_ann_index.
     """
-    from raptor_service_spark.geo.grid import cell_parent_np
-
     qmat = np.asarray(queries, dtype=np.float64)
     if cell_counts is None:
-        cell_counts = {
-            r["ann_cell"]: r["cnt"]
-            for r in index.groupBy("ann_cell").agg(F.count("*").alias("cnt")).collect()
-        }
+        cell_counts = _cell_counts(index)
 
     spark = index.sparkSession
     pairs: list[tuple[int, str]] = []
     full_scan_qids: list[str] = []
     for q, qid in zip(qmat, qids):
-        cells = plan_candidate_cells(
-            cell_counts, q, k, res, seed, min_candidates_factor
-        )
+        cells = plan_candidate_cells(cell_counts, q, k, res)
         if cells is None:
             full_scan_qids.append(qid)
         else:
@@ -480,10 +464,7 @@ def grid_knn_multi(
                 continue
             pdf = pdf.reset_index(drop=True)
             mat = np.frombuffer(b"".join(pdf["v"]), dtype=vec_dtype).reshape(len(pdf), -1)
-            mat = mat.astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0] = 1.0
-            mat /= norms[:, None]
+            mat = _unit_rows(mat.astype(np.float64))
             out = []
             for qid, grp in pdf.groupby("qid", sort=False):
                 sim = mat[grp.index.to_numpy()] @ qmap_b.value[qid]
@@ -493,7 +474,7 @@ def grid_knn_multi(
     parts = []
     if pairs:
         all_cells = sorted({c for c, _ in pairs})
-        prefixes = sorted({int(p) for p in cell_parent_np(np.array(all_cells), pfx_res)})
+        prefixes = sorted({int(p) for p in cell_parent_np(np.array(all_cells), ANN_PFX_RES)})
         cells_df = spark.createDataFrame(pairs, "ann_cell long, qid string")
         cand = (
             index.filter(F.col("pfx").isin(prefixes) & F.col("ann_cell").isin(all_cells))
@@ -508,8 +489,4 @@ def grid_knn_multi(
         return spark.createDataFrame([], "qid string, id string, dist double")
     allc = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     scored = allc.mapInPandas(score, schema="qid string, id string, dist double")
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.round(F.col("dist"), 9).asc(), F.col("id").asc())
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+    return _top_k_per_qid(scored, k, "id")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from raptor_service_spark.functions.vector import cosine_dist_col
+from raptor_service_spark.operators.knn import brute_force_knn
 from raptor_service_spark.operators.tree import TileTree
 
 RESULT_COLS = ("chunk_id", "doc_id", "idx", "text", "dist")
@@ -34,19 +35,11 @@ def search_summary_nodes(
     nodes: DataFrame, q: np.ndarray, dataset_id: str, expand_k: int
 ) -> DataFrame:
     """Stage 1: kNN over summary+root nodes (retrieval_repo.py:254-290)."""
-    return (
-        nodes.filter(
-            (F.col("dataset_id") == dataset_id) & F.col("kind").isin("summary", "root")
-        )
-        .select(
-            "node_id",
-            "tree_id",
-            "level",
-            "kind",
-            cosine_dist_col(F.col("v"), q).alias("dist"),
-        )
-        .orderBy(F.round(F.col("dist"), 9).asc(), F.col("node_id").asc())
-        .limit(expand_k)
+    summaries = nodes.filter(
+        (F.col("dataset_id") == dataset_id) & F.col("kind").isin("summary", "root")
+    )
+    return brute_force_knn(
+        summaries, q, expand_k, payload_cols=("tree_id", "level", "kind"), id_col="node_id"
     )
 
 
@@ -61,24 +54,17 @@ def gather_leaf_chunks(
     selected nodes -> exact cosine re-rank -> global top_k.
 
     ``node_ids`` is small (expand_k) -> ``isin`` literal + broadcast-friendly;
-    the distinct is on chunk_id only (A5: dropDuplicates).
+    the distinct is on chunk_id only (A5: dropDuplicates). An empty
+    ``node_ids`` yields an empty frame with ``RESULT_COLS``.
     """
     cand = (
         links.filter(F.col("node_id").isin(list(node_ids)))
         .select("chunk_id")
         .dropDuplicates(["chunk_id"])
     )
-    joined = cand.join(chunks, "chunk_id")
-    return (
-        joined.select(
-            "chunk_id",
-            "doc_id",
-            "idx",
-            "text",
-            cosine_dist_col(F.col("v"), q).alias("dist"),
-        )
-        .orderBy(F.round(F.col("dist"), 9).asc(), F.col("chunk_id").asc())
-        .limit(top_k)
+    return brute_force_knn(
+        cand.join(chunks, "chunk_id"), q, top_k,
+        payload_cols=("doc_id", "idx", "text"), id_col="chunk_id",
     )
 
 
@@ -95,8 +81,6 @@ def collapsed_retrieve(
     ``chunks``: (chunk_id, doc_id, idx, text, v) — the embedded span table.
     """
     picked = [r.node_id for r in search_summary_nodes(tree.nodes, q, dataset_id, expand_k).collect()]
-    if not picked:
-        return gather_leaf_chunks(tree.links, chunks, ["__none__"], q, top_k)
     return gather_leaf_chunks(tree.links, chunks, picked, q, top_k)
 
 
@@ -156,33 +140,28 @@ def traversal_retrieve(
     dataset_id: str,
     top_k: int = 8,
     levels_cap: int = 0,
-    per_level_k: int | None = None,
 ) -> DataFrame:
     """Beam-search traversal (retrieval_repo.py:350-436).
 
     Frontier loop lives on the driver (bounded by tree depth <= 10); each hop
     is children-of-frontier (broadcast semi-join on a literal id list) +
-    cosine + GLOBAL limit per_level_k.
+    cosine + GLOBAL limit top_k.
     """
-    k = per_level_k or top_k
     root = latest_root(tree.nodes, dataset_id)
-    if root is None:
-        return gather_leaf_chunks(tree.links, chunks, ["__none__"], q, top_k)
-
-    frontier = [root]
+    frontier = [] if root is None else [root]
     hops = 0
-    while True:
+    while frontier:
         if levels_cap and hops >= levels_cap:
             break
-        children = (
+        below = (
             tree.edges.filter(F.col("parent_id").isin(frontier))
             .select(F.col("child_id").alias("node_id"))
             .join(tree.nodes, "node_id")
-            .select("node_id", "kind", cosine_dist_col(F.col("v"), q).alias("dist"))
-            .orderBy(F.round(F.col("dist"), 9).asc(), F.col("node_id").asc())
-            .limit(k)  # GLOBAL limit across all parents — reference parity
-            .collect()
         )
+        # GLOBAL limit across all parents — reference parity
+        children = brute_force_knn(
+            below, q, top_k, payload_cols=("kind",), id_col="node_id"
+        ).collect()
         if not children:
             break
         frontier = [r.node_id for r in children]

@@ -31,7 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from raptor_service_spark.functions.text import summary_node_id, token_count
+from raptor_service_spark.functions.text import fake_summarize, summary_node_id, token_count
 from raptor_service_spark.functions.vector import hash_embed_udf
 from raptor_service_spark.geo.grid import cell_encode_col, cell_parent_col
 from raptor_service_spark.schema import N_DIM
@@ -76,9 +76,7 @@ class TreeParams:
     def resolved_summarize_fn(self):
         if self.summarize_fn is not None:
             return self.summarize_fn
-        return lambda texts: F.substring(
-            F.concat_ws("\n", texts), 1, self.summary_max_chars
-        )
+        return lambda texts: fake_summarize(texts, self.summary_max_chars)
 
 
 @dataclass
@@ -574,10 +572,18 @@ def build_tile_tree_checkpointed(
     ``{prefix}_nodes/_edges/_links`` tables; a rerun after a crash resumes
     from the last COMPLETE level (nodes are committed last, so a level is
     complete iff its nodes exist; partial edge/link commits above it are
-    rolled back with a copy-on-write delete).
+    rolled back with a copy-on-write delete). A fresh build
+    (``resume=False``) into a catalog that already holds ``{prefix}_nodes``
+    raises ``ValueError`` before writing anything: appending would double
+    every table.
     """
     p = params or TreeParams()
-    if resume and catalog.exists(f"{prefix}_nodes"):
+    if catalog.exists(f"{prefix}_nodes"):
+        if not resume:
+            raise ValueError(
+                f"catalog already holds {prefix}_nodes; resume it (resume=True) "
+                "or build into a fresh catalog or prefix"
+            )
         top = catalog.read(f"{prefix}_nodes").agg(F.max("level")).collect()[0][0]
         return _resume(catalog, prefix, p, int(top), {})
     leaves, leaf_links = _leaves(spans_embedded, p)

@@ -54,6 +54,16 @@ def main() -> None:
     spark = get_spark("raptor-span-pipeline")
     spark.sparkContext.setLogLevel("WARN")
 
+    catalog_path = os.path.join(args.workdir, "catalog")
+    if args.tree and not args.resume:
+        from raptor_service_spark.io.catalog import SnapshotCatalog
+
+        if SnapshotCatalog(catalog_path, spark).exists("tree_nodes"):
+            raise SystemExit(
+                f"{catalog_path} already holds a tree: pass --resume to continue it, "
+                "or use a fresh --workdir"
+            )
+
     spans_path = os.path.join(args.workdir, f"spans_n{args.n_docs}_s{args.seed}")
     if not os.path.exists(os.path.join(spans_path, "_SUCCESS")):
         prepare_spans_table(spark, args.n_docs, spans_path, seed=args.seed)
@@ -73,7 +83,7 @@ def main() -> None:
             build_tile_tree_checkpointed,
         )
 
-        cat = SnapshotCatalog(os.path.join(args.workdir, "catalog"), spark)
+        cat = SnapshotCatalog(catalog_path, spark)
         spans = spark.read.parquet(spans_path)
         emb = embed_spans(
             spans.withColumn("dataset_id", F.lit(f"ds-{args.seed}")), dim=args.dim
@@ -95,7 +105,7 @@ def main() -> None:
         from raptor_service_spark.operators.chunking import explode_spans
         from raptor_service_spark.operators.tree import TreeParams, ingest_incremental
 
-        cat = SnapshotCatalog(os.path.join(args.workdir, "catalog"), spark)
+        cat = SnapshotCatalog(catalog_path, spark)
         if not cat.exists("tree_nodes"):
             raise SystemExit("--ingest-delta needs a prior --tree run in this workdir")
         delta_docs = gen_documents_df(

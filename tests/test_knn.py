@@ -67,6 +67,27 @@ def test_projection_deterministic(emb_pd):
     assert (np.abs(a[0]) < 90).all() and (np.abs(a[1]) < 180).all()
 
 
+def test_projection_and_ann_cell_golden(spark):
+    """Pins the seeded projection basis to literals recorded before the seed
+    became a module constant. Every ANN oracle shares ``_projection_basis``,
+    so a changed seed would move every stored index's cells while they all
+    still pass; this test would not."""
+    j = np.arange(64)
+    vecs = np.stack([np.sin(j + 1.0), np.cos(3.0 * j), np.where(j % 5 == 0, -1.0, 0.25)])
+    lat, lng = project_to_latlng_np(vecs)
+    np.testing.assert_allclose(
+        lat, [-36.55311963928043, 8.496608084833106, -0.582786989202797], rtol=1e-12
+    )
+    np.testing.assert_allclose(
+        lng, [-10.696325495626489, 157.42514691444185, -157.05773672612074], rtol=1e-12
+    )
+    df = spark.createDataFrame(
+        [(str(i), v.tolist()) for i, v in enumerate(vecs)], "id string, v array<double>"
+    )
+    cells = [r.ann_cell for r in with_projected_cell(df, res=4).orderBy("id").collect()]
+    assert cells == [72057594037928007, 72057594037928078, 72057594037928049]
+
+
 def test_grid_knn_recall_and_exactness(emb, emb_pd):
     dim = len(emb_pd.v.iloc[0])
     cellified = with_projected_cell(emb, res=4).persist()

@@ -654,3 +654,42 @@ def test_always_gated_core_lint_clean(spark, qmap):
     for name in entry_mod._ALWAYS_GATED_CORE:
         v = lint_query(name, qmap[name](spark, SF_DIR))
         assert v is None, v
+
+
+def test_retrieval_stages_are_take_ordered_not_global_sort(spark, tmp_path):
+    """Both collapsed-retrieval stages are a distributed top-k
+    (TakeOrderedAndProject via brute_force_knn), never a global Sort of the
+    node or chunk table."""
+    import re
+
+    import numpy as np
+
+    from raptor_service_spark.operators.retrieval import (
+        gather_leaf_chunks,
+        search_summary_nodes,
+    )
+
+    v = [0.5, -1.0, 2.0, 0.25]
+    spark.createDataFrame(
+        [(f"n{i}", "t0", 1, "summary", "ds", v) for i in range(6)],
+        "node_id string, tree_id string, level int, kind string, dataset_id string,"
+        " v array<float>",
+    ).write.parquet(str(tmp_path / "nodes"))
+    spark.createDataFrame(
+        [(f"n{i % 6}", f"c{i}") for i in range(12)], "node_id string, chunk_id string"
+    ).write.parquet(str(tmp_path / "links"))
+    spark.createDataFrame(
+        [(f"c{i}", "d0", i, "text", v) for i in range(12)],
+        "chunk_id string, doc_id string, idx int, text string, v array<float>",
+    ).write.parquet(str(tmp_path / "chunks"))
+    q = np.array([1.0, 0.0, -1.0, 0.5])
+    nodes, links, chunks = (
+        spark.read.parquet(str(tmp_path / t)) for t in ("nodes", "links", "chunks")
+    )
+    for df in (
+        search_summary_nodes(nodes, q, "ds", 5),
+        gather_leaf_chunks(links, chunks, ["n0", "n1"], q, 8),
+    ):
+        plan = _plan(df)
+        assert "TakeOrderedAndProject" in plan
+        assert not re.search(r"Sort \[[^\]]*\], true", plan), plan

@@ -127,6 +127,23 @@ def test_resume_noop_when_complete(spark, spans, tmp_path):
     assert len(cat.snapshots("tree_nodes")) == n_snaps
 
 
+def test_fresh_build_into_existing_tree_raises(spark, spans, tmp_path):
+    """A second ``resume=False`` build into a catalog that already holds the
+    tree refuses before writing anything: appending its leaves and levels
+    would double every table."""
+    cat = SnapshotCatalog(str(tmp_path / "cat"), spark)
+    build_tile_tree_checkpointed(spans, PARAMS, catalog=cat, resume=False)
+    tables = ("tree_nodes", "tree_edges", "tree_links")
+
+    def state():
+        return {t: (len(cat.snapshots(t)), cat.read(t).count()) for t in tables}
+
+    before = state()
+    with pytest.raises(ValueError, match="tree_nodes"):
+        build_tile_tree_checkpointed(spans, PARAMS, catalog=cat, resume=False)
+    assert state() == before
+
+
 # ----------------------------------------------------- incremental ingest
 
 

@@ -131,6 +131,10 @@ def test_unknown_dataset_returns_empty(world):
     q = gen_query_vectors(seed=8, n=1, dim=DIM)[0]
     got = collapsed_retrieve(world["tree"], world["chunks"], q, "nope", top_k=8).toPandas()
     assert len(got) == 0
+    assert tuple(got.columns) == RESULT_COLS
+    got = traversal_retrieve(world["tree"], world["chunks"], q, "nope", top_k=8).toPandas()
+    assert len(got) == 0
+    assert tuple(got.columns) == RESULT_COLS
 
 
 def test_multi_dataset_retrieval_isolation(spark):
