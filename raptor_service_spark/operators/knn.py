@@ -12,12 +12,15 @@ candidates exist.
 Physical shape of brute force: per-Arrow-batch LOCAL top-k in a mapInPandas
 kernel (BLAS matvec), then a global merge of ``numPartitions * k`` rows via
 TakeOrderedAndProject — the classic distributed top-k: no full sort, no full
-shuffle, driver sees only the merged k.
+shuffle, driver sees only the merged k. ``brute_force_knn_np`` is its twin for
+a matrix already in driver memory (the tile-tree head), ranking id for id
+like the Spark kernel.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
@@ -57,6 +60,24 @@ def _unit_rows(mat: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(mat, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return mat / norms
+
+
+def check_query(q) -> np.ndarray:
+    """``q`` (one vector, or one query per row) as float64. Raises
+    ``ValueError`` when its cosine is undefined: an all-zero or non-finite
+    query. Runs on the driver, before any Spark job: left to the kernels, a
+    zero query fails a task with DIVIDE_BY_ZERO (ANSI) or ranks NaN
+    distances."""
+    q = np.asarray(q, dtype=np.float64)
+    norms = np.linalg.norm(q, axis=-1)
+    if not (np.isfinite(norms) & (norms > 0)).all():
+        raise ValueError("query vector must be finite and not all-zero")
+    return q
+
+
+def _round9(x: float) -> Decimal:
+    """Spark's ``round(dist, 9)`` on a double: HALF_UP on its decimal form."""
+    return Decimal(repr(x)).quantize(Decimal("1e-9"), ROUND_HALF_UP)
 
 
 def _cell_counts(df_with_cell: DataFrame) -> dict[int, int]:
@@ -171,12 +192,33 @@ def brute_force_knn(
     (round(dist, 9), id) so near-ties are deterministic across float fold
     orders (SURVEY §7.4.1); the returned dist stays exact.
     """
+    q = check_query(q)
     cols = [id_col, *payload_cols]
     return (
         df.select(*cols, cosine_dist_col(F.col(vec_col), q).alias("dist"))
         .orderBy(F.round(F.col("dist"), 9).asc(), F.col(id_col).asc())
         .limit(k)
     )
+
+
+def brute_force_knn_np(mat: np.ndarray, ids: np.ndarray, q: np.ndarray, k: int) -> np.ndarray:
+    """Driver-side twin of ``brute_force_knn`` for a matrix already in
+    memory (the tile-tree head): the row indices of the top ``k`` rows of
+    ``mat``, whose ids are ``ids``.
+
+    Same float64 fold as ``cosine_sim_col`` (products summed over the
+    dimensions left to right, then ``dot / (sqrt(sq) * |q|)``) and the same
+    order (Spark's HALF_UP ``round(dist, 9)``, then id), so it returns the
+    rows ``brute_force_knn`` would, in its order."""
+    q = check_query(q)
+    dot = np.zeros(len(mat))
+    sq = np.zeros(len(mat))
+    for j in range(mat.shape[1]):
+        dot = dot + mat[:, j] * q[j]
+        sq = sq + mat[:, j] * mat[:, j]
+    dist = 1.0 - dot / (np.sqrt(sq) * float(np.linalg.norm(q)))
+    keys = [(_round9(d), i) for d, i in zip(dist.tolist(), ids.tolist())]
+    return np.array(sorted(range(len(keys)), key=keys.__getitem__)[:k], dtype=np.int64)
 
 
 def brute_force_knn_multi(
@@ -194,7 +236,7 @@ def brute_force_knn_multi(
     broadcast query matrix (one BLAS GEMM per Arrow batch), then a window
     keeps the global k — shuffle carries only ~(batches * k * n_queries) rows.
     """
-    qmat = np.asarray(queries, dtype=np.float64)
+    qmat = check_query(queries)
     qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
     qmat_n = qmat / qnorm
     qid_arr = list(qids)
@@ -242,7 +284,7 @@ def grid_knn(
     (groupBy(ann_cell).count()) via plan_candidate_cells — not a
     count-job-per-ring probe loop; recall measured in tests vs brute force.
     """
-    q = np.asarray(q, dtype=np.float64)
+    q = check_query(q)
     cells = plan_candidate_cells(_cell_counts(df_with_cell), q, k, res)
     if cells is None:  # sparse table: degrade to exact full scan
         cand = df_with_cell
@@ -440,7 +482,7 @@ def grid_knn_multi(
     high query counts. Output: (qid, id, dist), top-k per qid. ``index``
     must carry (id, v binary-f32, ann_cell, pfx) — see build_ann_index.
     """
-    qmat = np.asarray(queries, dtype=np.float64)
+    qmat = check_query(queries)
     if cell_counts is None:
         cell_counts = _cell_counts(index)
 

@@ -7,15 +7,26 @@ search_summary_nodes + gather_leaf_chunks), :350-436 (traversal beam).
 Output schema matches the reference's gather_leaf_chunks rows exactly:
 ``(chunk_id, doc_id, idx, text, dist)`` (retrieval_repo.py:314-319).
 
+Both modes rank the tree head first: the level >= 1 nodes and the level >= 2
+edges, which the ladder bounds whatever the corpus size (``TileTree.head``).
+The head is loaded into driver memory once per tree and ranked by
+``brute_force_knn_np``, so those rankings run no Spark job. What grows with
+the corpus stays in Spark: traversal's one hop out of level 1 and the leaf
+gather. ``search_summary_nodes`` and ``latest_root`` are the Spark forms of
+the head's stage 1 and root, kept as the reference it is tested against.
+
 Parity notes (SURVEY §2.5, §7.4):
   * traversal applies ``LIMIT k`` GLOBALLY across all parents per level —
     exactly the reference's SQL, not a per-parent window.
   * ordering key is (round(dist, 9), id): float64 fold order differs
     between JVM and numpy/DuckDB in the last ulps, so near-ties would flip
     nondeterministically without the rounding; the reference has no tie-break
-    at all (SURVEY §7.4.1). The returned dist column stays exact.
-  * the per-level frontier is a tiny literal IN-list -> broadcast semi-join,
-    no shuffle of the big side beyond the scan.
+    at all (SURVEY §7.4.1). The returned dist column stays exact. The head's
+    numpy ranking folds in the JVM's order and rounds like Spark, so it
+    picks the same ids.
+  * the level-1 frontier is a tiny literal IN-list on the edges, and the
+    selected nodes' ids a literal IN-list on the links: no shuffle of the
+    big side beyond the scan.
 """
 
 from __future__ import annotations
@@ -25,8 +36,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from raptor_service_spark.functions.vector import cosine_dist_col
-from raptor_service_spark.operators.knn import brute_force_knn
-from raptor_service_spark.operators.tree import TileTree
+from raptor_service_spark.operators.knn import (
+    brute_force_knn,
+    brute_force_knn_np,
+    check_query,
+)
+from raptor_service_spark.operators.tree import TileTree, TreeHead
 
 RESULT_COLS = ("chunk_id", "doc_id", "idx", "text", "dist")
 
@@ -53,19 +68,27 @@ def gather_leaf_chunks(
     """Stage 2 (retrieval_repo.py:292-348): DISTINCT linked chunks of the
     selected nodes -> exact cosine re-rank -> global top_k.
 
-    ``node_ids`` is small (expand_k) -> ``isin`` literal + broadcast-friendly;
-    the distinct is on chunk_id only (A5: dropDuplicates). An empty
-    ``node_ids`` yields an empty frame with ``RESULT_COLS``.
+    ``node_ids`` is small (expand_k) -> ``isin`` literal on the links. The
+    distinct is a left semi-join (A5): each chunk row counts once however
+    many selected nodes link it, NULL keys drop, and no shuffle runs. An
+    empty ``node_ids`` yields an empty frame with ``RESULT_COLS``.
     """
-    cand = (
-        links.filter(F.col("node_id").isin(list(node_ids)))
-        .select("chunk_id")
-        .dropDuplicates(["chunk_id"])
-    )
+    cand = links.filter(F.col("node_id").isin(list(node_ids))).select("chunk_id")
     return brute_force_knn(
-        cand.join(chunks, "chunk_id"), q, top_k,
+        chunks.join(cand, "chunk_id", "left_semi"), q, top_k,
         payload_cols=("doc_id", "idx", "text"), id_col="chunk_id",
     )
+
+
+def _rank_head(head: TreeHead, rows: np.ndarray, q: np.ndarray, k: int) -> np.ndarray:
+    """The head rows among ``rows`` that ``brute_force_knn`` ranks top ``k``."""
+    return rows[brute_force_knn_np(head.v[rows], head.node_id[rows], q, k)]
+
+
+def head_summary_nodes(head: TreeHead, q: np.ndarray, dataset_id: str, expand_k: int) -> list[str]:
+    """Stage 1 from the in-memory head: the node ids ``search_summary_nodes``
+    returns, in its order."""
+    return head.node_id[_rank_head(head, head.summary_rows(dataset_id), q, expand_k)].tolist()
 
 
 def collapsed_retrieve(
@@ -79,8 +102,10 @@ def collapsed_retrieve(
     """Collapsed-tree retrieval (retrieval_service.py:76-120).
 
     ``chunks``: (chunk_id, doc_id, idx, text, v) — the embedded span table.
+    Stage 1 ranks the in-memory head; the gather is the only Spark step.
     """
-    picked = [r.node_id for r in search_summary_nodes(tree.nodes, q, dataset_id, expand_k).collect()]
+    q = check_query(q)
+    picked = head_summary_nodes(tree.head(), q, dataset_id, expand_k)
     return gather_leaf_chunks(tree.links, chunks, picked, q, top_k)
 
 
@@ -133,6 +158,18 @@ def latest_root(nodes: DataFrame, dataset_id: str) -> str | None:
     return rows[0].node_id if rows else None
 
 
+def _hop_into_leaves(tree: TileTree, frontier: list[str], q: np.ndarray, k: int) -> list[str]:
+    """The beam's hop out of level 1, in Spark: the global top ``k`` of the
+    frontier's children (reference parity: one LIMIT across all parents).
+    A frontier without children stays the frontier."""
+    below = (
+        tree.edges.filter(F.col("parent_id").isin(frontier))
+        .select(F.col("child_id").alias("node_id"))
+        .join(tree.nodes, "node_id")
+    )
+    return [r.node_id for r in brute_force_knn(below, q, k, id_col="node_id").collect()] or frontier
+
+
 def traversal_retrieve(
     tree: TileTree,
     chunks: DataFrame,
@@ -143,29 +180,25 @@ def traversal_retrieve(
 ) -> DataFrame:
     """Beam-search traversal (retrieval_repo.py:350-436).
 
-    Frontier loop lives on the driver (bounded by tree depth <= 10); each hop
-    is children-of-frontier (broadcast semi-join on a literal id list) +
-    cosine + GLOBAL limit top_k.
+    The beam starts at the dataset's latest root and walks the in-memory
+    head down to level 1 with no Spark job: each hop takes the children of
+    the whole frontier (one per edge, as ``edges ⋈ nodes`` gives them) and
+    keeps the GLOBAL top_k. The one hop out of level 1, whose edges and
+    leaves grow with the corpus, is a single Spark top_k over the children
+    of the frontier (a literal id list on the edges, joined to the nodes);
+    the gather follows. ``levels_cap`` bounds the hops; a frontier without children
+    ends the walk and is gathered as it stands.
     """
-    root = latest_root(tree.nodes, dataset_id)
-    frontier = [] if root is None else [root]
-    hops = 0
-    while frontier:
-        if levels_cap and hops >= levels_cap:
+    q = check_query(q)
+    head = tree.head()
+    rows, hops = head.root_rows(dataset_id), 0
+    while len(rows) and not (levels_cap and hops >= levels_cap):
+        if head.level[rows[0]] == 1:
+            frontier = _hop_into_leaves(tree, head.node_id[rows].tolist(), q, top_k)
+            return gather_leaf_chunks(tree.links, chunks, frontier, q, top_k)
+        below = head.child_rows(rows)
+        if not len(below):
             break
-        below = (
-            tree.edges.filter(F.col("parent_id").isin(frontier))
-            .select(F.col("child_id").alias("node_id"))
-            .join(tree.nodes, "node_id")
-        )
-        # GLOBAL limit across all parents — reference parity
-        children = brute_force_knn(
-            below, q, top_k, payload_cols=("kind",), id_col="node_id"
-        ).collect()
-        if not children:
-            break
-        frontier = [r.node_id for r in children]
+        rows = _rank_head(head, below, q, top_k)  # GLOBAL limit across all parents
         hops += 1
-        if all(r.kind == "leaf" for r in children):
-            break
-    return gather_leaf_chunks(tree.links, chunks, frontier, q, top_k)
+    return gather_leaf_chunks(tree.links, chunks, head.node_id[rows].tolist(), q, top_k)

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -79,6 +80,68 @@ class TreeParams:
         return lambda texts: fake_summarize(texts, self.summary_max_chars)
 
 
+@dataclass(frozen=True)
+class TreeHead:
+    """A tile tree above its leaves, in driver memory: every level >= 1 node
+    (row ``i`` is node ``node_id[i]``, its embedding ``v[i]`` in one float64
+    matrix) and, for every level >= 2 parent, the rows of its children. The
+    ladder bounds it whatever the corpus size: the cells of levels >= 1 per
+    dataset, 1,041 nodes for ``(8, 5, 2, 0)``. Level-1 edges and the leaves
+    grow with the corpus and stay in Spark."""
+
+    node_id: np.ndarray
+    dataset_id: np.ndarray
+    level: np.ndarray
+    kind: np.ndarray
+    v: np.ndarray
+    children: dict[str, np.ndarray]
+
+    def summary_rows(self, dataset_id: str) -> np.ndarray:
+        """Rows of the dataset's summary and root nodes."""
+        return np.flatnonzero(
+            (self.dataset_id == dataset_id) & np.isin(self.kind, ["summary", "root"])
+        )
+
+    def root_rows(self, dataset_id: str) -> np.ndarray:
+        """The dataset's latest root (greatest ``node_id``) as a one-row
+        frontier; empty when the dataset has none."""
+        rows = np.flatnonzero((self.dataset_id == dataset_id) & (self.kind == "root"))
+        return np.array([max(rows, key=self.node_id.__getitem__)]) if len(rows) else rows
+
+    def child_rows(self, parent_rows: np.ndarray) -> np.ndarray:
+        """Rows of the children of a frontier of level >= 2 nodes, one per
+        edge, as ``edges ⋈ nodes`` gives them: a child under two frontier
+        parents appears twice, a parent repeated in the frontier counts once."""
+        parts = [self.children[p] for p in dict.fromkeys(self.node_id[parent_rows])
+                 if p in self.children]
+        return np.concatenate(parts) if parts else np.zeros(0, dtype=np.int64)
+
+
+def _load_head(nodes: DataFrame, edges: DataFrame) -> TreeHead:
+    """Two collects: the level >= 1 nodes and the level >= 2 edges."""
+    rows = (
+        nodes.filter(F.col("level") >= 1)
+        .select("node_id", "dataset_id", "level", "kind", "v")
+        .collect()
+    )
+    node_id = np.array([r.node_id for r in rows], dtype=object)
+    rows_of: dict[str, list[int]] = {}
+    for i, nid in enumerate(node_id):
+        rows_of.setdefault(nid, []).append(i)
+    children: dict[str, list[int]] = {}
+    for e in edges.filter(F.col("level") >= 2).select("parent_id", "child_id").collect():
+        children.setdefault(e.parent_id, []).extend(rows_of.get(e.child_id, ()))
+    return TreeHead(
+        node_id=node_id,
+        dataset_id=np.array([r.dataset_id for r in rows], dtype=object),
+        level=np.array([r.level for r in rows], dtype=np.int64),
+        kind=np.array([r.kind for r in rows], dtype=object),
+        v=np.array([r.v for r in rows], dtype=np.float64).reshape(len(rows), -1)
+        if rows else np.zeros((0, 0)),
+        children={p: np.array(c, dtype=np.int64) for p, c in children.items()},
+    )
+
+
 @dataclass
 class TileTree:
     nodes: DataFrame  # TILE_NODES + v (embedding) + ord
@@ -86,6 +149,19 @@ class TileTree:
     links: DataFrame  # NODE_CHUNKS + level
     levels: int = 0
     stats: list[dict] = field(default_factory=list)
+    # (nodes, edges, TreeHead) the head was loaded from
+    _head: tuple | None = field(default=None, init=False, repr=False, compare=False)
+
+    def head(self) -> TreeHead:
+        """The tree head, loaded on first use and kept while ``nodes`` and
+        ``edges`` are the DataFrames it was loaded from. A catalog read pins
+        one snapshot and every build, resume and ingest returns a new
+        TileTree, so an ingested tree loads its own head and an old one keeps
+        serving its snapshot."""
+        cached = self._head
+        if cached is None or cached[0] is not self.nodes or cached[1] is not self.edges:
+            cached = self._head = (self.nodes, self.edges, _load_head(self.nodes, self.edges))
+        return cached[2]
 
 
 def _leaf_nodes(spans: DataFrame, res_leaf: int) -> DataFrame:

@@ -18,8 +18,11 @@ in local mode; only --master (and executor confs) change:
 Steps: (1) prepare the interleaved span table if absent, (2) run the measured
 engine phase (grid encode + PIP join + ANN index build + grid-compacted kNN),
 (3) optionally build the checkpoint-resumable tile tree into a
-SnapshotCatalog (--tree), (4) print one JSON line of metrics, including
-per-stage wall and the catalog's per-commit lineage (snapshot log).
+SnapshotCatalog (--tree) and/or ingest a delta into it (--ingest-delta),
+each followed by one collapsed and one traversal request over the tree it
+leaves behind (top chunk ids, wall ms and Spark jobs per request; the first
+request also loads the tree head), (4) print one JSON line of metrics,
+including per-stage wall and the catalog's per-commit lineage (snapshot log).
 """
 
 from __future__ import annotations
@@ -28,8 +31,36 @@ import argparse
 import json
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def probe_retrieval(spark, tree, chunks, dataset_id: str, dim: int, seed: int, tag: str) -> dict:
+    """One collapsed and one traversal request over ``tree``."""
+    from raptor_service_spark.datagen import gen_query_vectors
+    from raptor_service_spark.operators.retrieval import (
+        collapsed_retrieve,
+        traversal_retrieve,
+    )
+
+    q = gen_query_vectors(seed=seed, n=1, dim=dim)[0]
+    sc = spark.sparkContext
+    out = {}
+    for mode, fn in (("collapsed", collapsed_retrieve), ("traversal", traversal_retrieve)):
+        group = f"run-pipeline-{tag}-{mode}"
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
+        try:
+            rows = fn(tree, chunks, q, dataset_id).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        out[mode] = {
+            "top_chunk_ids": [r.chunk_id for r in rows],
+            "ms": round((time.perf_counter() - t0) * 1000, 1),
+            "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+        }
+    return out
 
 
 def main() -> None:
@@ -73,10 +104,18 @@ def main() -> None:
         seed=args.seed, dim=args.dim,
     )
 
-    if args.tree:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        from raptor_service_spark.functions.vector import embed_spans
+    from raptor_service_spark.functions.vector import embed_spans
+
+    dataset_id = f"ds-{args.seed}"
+    emb = embed_spans(
+        spark.read.parquet(spans_path).withColumn("dataset_id", F.lit(dataset_id)),
+        dim=args.dim,
+    )
+    chunk_cols = ("chunk_id", "doc_id", "idx", "text", "v")
+
+    if args.tree:
         from raptor_service_spark.io.catalog import SnapshotCatalog
         from raptor_service_spark.operators.tree import (
             TreeParams,
@@ -84,23 +123,17 @@ def main() -> None:
         )
 
         cat = SnapshotCatalog(catalog_path, spark)
-        spans = spark.read.parquet(spans_path)
-        emb = embed_spans(
-            spans.withColumn("dataset_id", F.lit(f"ds-{args.seed}")), dim=args.dim
-        )
         tree = build_tile_tree_checkpointed(emb, TreeParams(dim=args.dim), catalog=cat,
                                             resume=args.resume)
         metrics["tree_levels"] = tree.levels
         metrics["tree_level_stats"] = tree.stats
         metrics["snapshot_lineage"] = cat.snapshots("tree_nodes")
+        metrics["retrieval"] = probe_retrieval(
+            spark, tree, emb.select(*chunk_cols), dataset_id, args.dim, args.seed, "tree"
+        )
 
     if args.ingest_delta:
-        import time as _time
-
-        from pyspark.sql import functions as F
-
         from raptor_service_spark.datagen import gen_documents_df
-        from raptor_service_spark.functions.vector import embed_spans
         from raptor_service_spark.io.catalog import SnapshotCatalog
         from raptor_service_spark.operators.chunking import explode_spans
         from raptor_service_spark.operators.tree import TreeParams, ingest_incremental
@@ -110,15 +143,19 @@ def main() -> None:
             raise SystemExit("--ingest-delta needs a prior --tree run in this workdir")
         delta_docs = gen_documents_df(
             spark, args.ingest_delta, seed=args.seed + 1_000_000
-        ).withColumn("dataset_id", F.lit(f"ds-{args.seed}"))
+        ).withColumn("dataset_id", F.lit(dataset_id))
         delta = embed_spans(explode_spans(delta_docs), dim=args.dim)
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         tree = ingest_incremental(delta, cat, TreeParams(dim=args.dim))
         metrics["ingest_delta_docs"] = args.ingest_delta
-        metrics["ingest_sec"] = round(_time.perf_counter() - t0, 3)
+        metrics["ingest_sec"] = round(time.perf_counter() - t0, 3)
         metrics["tree_levels_after_ingest"] = tree.levels
         metrics["tree_level_stats_after_ingest"] = tree.stats
         metrics["ingest_lineage_tail"] = cat.snapshots("tree_nodes")[-3:]
+        metrics["retrieval_after_ingest"] = probe_retrieval(
+            spark, tree, emb.select(*chunk_cols).unionByName(delta.select(*chunk_cols)),
+            dataset_id, args.dim, args.seed, "ingest",
+        )
 
     print(json.dumps(metrics, default=str))
     spark.stop()

@@ -10,7 +10,10 @@ from raptor_service_spark.datagen import gen_query_vectors
 from raptor_service_spark.operators.knn import (
     brute_force_knn,
     brute_force_knn_multi,
+    brute_force_knn_np,
+    build_ann_index,
     grid_knn,
+    grid_knn_multi,
     project_to_latlng_np,
     with_projected_cell,
 )
@@ -113,3 +116,43 @@ def test_grid_knn_falls_back_when_sparse(emb, spark):
     got = grid_knn(cellified, q, 5, res=6).toPandas()
     exp = _oracle_topk(pdf, q, 5)
     assert got.id.tolist() == exp.id.tolist()
+
+
+@pytest.mark.parametrize("bad", ["zero", "nan"])
+def test_degenerate_query_raises_before_any_job(spark, emb, emb_pd, bad):
+    """An all-zero or non-finite query has no cosine: every kernel raises
+    ValueError on the driver instead of failing a task (DIVIDE_BY_ZERO under
+    ANSI) or ranking NaN distances. The multi-query kernels check every row."""
+    dim = len(emb_pd.v.iloc[0])
+    good = gen_query_vectors(seed=25, n=1, dim=dim)[0]
+    q = np.zeros(dim) if bad == "zero" else np.where(np.arange(dim) == 3, np.nan, good)
+    qs = np.stack([good, q])
+    index = build_ann_index(emb.select("id", F.lit("t").alias("text")), dim=dim)
+    mat = np.array(emb_pd.v.tolist(), dtype=np.float64)
+    calls = [
+        lambda: brute_force_knn(emb, q, 5).collect(),
+        lambda: grid_knn(with_projected_cell(emb, res=4), q, 5, res=4).collect(),
+        lambda: brute_force_knn_multi(emb, qs, ["g", "b"], 5).collect(),
+        lambda: grid_knn_multi(index, qs, ["g", "b"], 5, res=4, cell_counts={}).collect(),
+        lambda: brute_force_knn_np(mat, emb_pd.id.to_numpy(), q, 5),
+    ]
+    sc = spark.sparkContext
+    group = f"degenerate-query-{bad}"
+    sc.setJobGroup(group, group)
+    try:
+        for call in calls:
+            with pytest.raises(ValueError, match="finite and not all-zero"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_brute_force_np_matches_spark(emb, emb_pd):
+    """The numpy twin returns brute_force_knn's ids in its order."""
+    dim = len(emb_pd.v.iloc[0])
+    mat = np.array(emb_pd.v.tolist(), dtype=np.float64)
+    ids = emb_pd.id.to_numpy()
+    for q in gen_query_vectors(seed=26, n=3, dim=dim):
+        got = ids[brute_force_knn_np(mat, ids, q, 25)].tolist()
+        assert got == [r.id for r in brute_force_knn(emb, q, 25).collect()]

@@ -693,3 +693,46 @@ def test_retrieval_stages_are_take_ordered_not_global_sort(spark, tmp_path):
         plan = _plan(df)
         assert "TakeOrderedAndProject" in plan
         assert not re.search(r"Sort \[[^\]]*\], true", plan), plan
+
+
+def test_retrieval_requests_run_a_bounded_number_of_jobs(spark):
+    """Once the tree head is loaded, a collapsed request runs at most 2 Spark
+    jobs (the leaf gather) and a traversal request at most 4 (the hop out
+    of level 1, then the gather): the rankings above level 1 run in driver
+    memory, so a per-hop scan of the node table fails here."""
+    from raptor_service_spark.datagen import gen_documents_df, gen_query_vectors
+    from raptor_service_spark.functions.vector import embed_spans
+    from raptor_service_spark.operators.chunking import explode_spans
+    from raptor_service_spark.operators.retrieval import (
+        collapsed_retrieve,
+        traversal_retrieve,
+    )
+    from raptor_service_spark.operators.tree import TreeParams, build_tile_tree
+
+    dim = 32
+    spans = embed_spans(explode_spans(gen_documents_df(spark, 40, seed=13)), dim=dim).persist()
+    tree = build_tile_tree(
+        spans, TreeParams(res_ladder=(6, 3, 0), summary_cap=16, salt_buckets=4, dim=dim)
+    )
+    tree.nodes = tree.nodes.persist()
+    tree.edges = tree.edges.persist()
+    tree.links = tree.links.persist()
+    chunks = spans.select("chunk_id", "doc_id", "idx", "text", "v").persist()
+    assert tree.levels == 2  # root -> level 1 in the head, then one hop to the leaves
+    sc = spark.sparkContext
+
+    def jobs(fn, q, group):
+        sc.setJobGroup(group, group)
+        try:
+            assert fn(tree, chunks, q, "ds-13").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    warm, *qs = gen_query_vectors(seed=31, n=3, dim=dim)
+    jobs(collapsed_retrieve, warm, "retrieval-warm-up")
+    for i, q in enumerate(qs):
+        assert jobs(collapsed_retrieve, q, f"retrieval-collapsed-{i}") <= 2
+        assert jobs(traversal_retrieve, q, f"retrieval-traversal-{i}") <= 4
+    for df in (tree.nodes, tree.edges, tree.links, chunks, spans):
+        df.unpersist()

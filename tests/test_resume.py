@@ -255,6 +255,46 @@ def test_checkpointed_build_and_ingest_release_their_cache(spark, tmp_path):
     assert persisted() == before
 
 
+def test_head_cache_misses_after_ingest(spark, tmp_path, monkeypatch):
+    """The tree head is cached per TileTree: an ingest returns a new tree
+    whose requests see the ingested corpus, the pre-ingest tree keeps
+    serving its own snapshot, and a second request reloads nothing."""
+    from raptor_service_spark.datagen import gen_query_vectors
+    from raptor_service_spark.operators import tree as tree_mod
+    from raptor_service_spark.operators.retrieval import (
+        collapsed_retrieve,
+        traversal_retrieve,
+    )
+    from raptor_service_spark.operators.tree import ingest_incremental
+
+    a = _spans_for(spark, 30, seed=70)
+    b = _spans_for(spark, 12, seed=71)
+    chunks = a.unionByName(b).select("chunk_id", "doc_id", "idx", "text", "v").persist()
+    q = gen_query_vectors(seed=72, n=1, dim=16)[0]
+    loads = []
+    load = tree_mod._load_head
+    monkeypatch.setattr(tree_mod, "_load_head", lambda n, e: loads.append(1) or load(n, e))
+
+    def rows(tree):
+        return [
+            [tuple(r) for r in fn(tree, chunks, q, "ds-shared").collect()]
+            for fn in (collapsed_retrieve, traversal_retrieve)
+        ]
+
+    cat = SnapshotCatalog(str(tmp_path / "cat_head"), spark)
+    old = build_tile_tree_checkpointed(a, PARAMS, catalog=cat, prefix="t", resume=False)
+    old_rows = rows(old)
+    assert len(loads) == 1
+    new = ingest_incremental(b, cat, PARAMS, prefix="t")
+
+    full = build_tile_tree(a.unionByName(b), PARAMS)
+    assert rows(new) == rows(full)
+    assert rows(new) != old_rows  # the delta really reaches the results
+    assert rows(old) == old_rows
+    assert len(loads) == 3  # old, new and full each loaded their head once
+    chunks.unpersist()
+
+
 def test_compact_binpacks_files_and_preserves_rows(spark, tmp_path):
     cat = SnapshotCatalog(str(tmp_path / "cat"), spark)
     for i in range(5):  # 5 commits -> 5 data dirs of small files

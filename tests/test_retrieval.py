@@ -13,21 +13,22 @@ from raptor_service_spark.operators.chunking import explode_spans
 from raptor_service_spark.operators.retrieval import (
     RESULT_COLS,
     collapsed_retrieve,
+    head_summary_nodes,
     latest_root,
+    search_summary_nodes,
     traversal_retrieve,
 )
-from raptor_service_spark.operators.tree import TreeParams, build_tile_tree
+from raptor_service_spark.operators.tree import TileTree, TreeParams, build_tile_tree
 
 DIM = 32
 PARAMS = TreeParams(res_ladder=(6, 3, 0), summary_cap=16, salt_buckets=4, dim=DIM)
 DATASET = "ds-13"
 
 
-@pytest.fixture(scope="module")
-def world(spark):
+def _world(spark, params):
     docs = gen_documents_df(spark, 40, seed=13)
     spans = embed_spans(explode_spans(docs), dim=DIM).persist()
-    tree = build_tile_tree(spans, PARAMS)
+    tree = build_tile_tree(spans, params)
     tree.nodes = tree.nodes.persist()
     tree.edges = tree.edges.persist()
     tree.links = tree.links.persist()
@@ -38,6 +39,33 @@ def world(spark):
     pl = tree.links.select("node_id", "chunk_id", "rank").toPandas()
     pc = chunks.toPandas()
     return dict(tree=tree, chunks=chunks, pn=pn, pe=pe, pl=pl, pc=pc)
+
+
+@pytest.fixture(scope="module")
+def world(spark):
+    return _world(spark, PARAMS)
+
+
+@pytest.fixture(scope="module")
+def world_overlap(spark):
+    """Soft multi-membership (``overlap_kring=1``) on a four-level ladder: a
+    level-1 node hangs under several level-2 parents, so the head's beam
+    hops see the same child more than once."""
+    w = _world(spark, TreeParams(res_ladder=(6, 4, 2, 0), summary_cap=16, salt_buckets=4,
+                                 dim=DIM, overlap_kring=1))
+    head_kids = np.concatenate(list(w["tree"].head().children.values()))
+    assert len(head_kids) > len(set(head_kids.tolist()))
+    return w
+
+
+@pytest.fixture(scope="module")
+def two_datasets(spark):
+    a = embed_spans(explode_spans(gen_documents_df(spark, 20, seed=21)), dim=DIM)
+    b = embed_spans(explode_spans(gen_documents_df(spark, 15, seed=22)), dim=DIM)
+    tree = build_tile_tree(a.unionByName(b), PARAMS)
+    tree.nodes = tree.nodes.persist()
+    tree.edges = tree.edges.persist()
+    return tree
 
 
 def _dist(vecs: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -99,17 +127,18 @@ def _oracle_traversal(pn, pe, q, k, levels_cap):
     return frontier
 
 
-def test_traversal_matches_oracle(world):
+def test_traversal_matches_oracle(world, world_overlap):
     qs = gen_query_vectors(seed=6, n=3, dim=DIM)
-    for q in qs:
-        got = (
-            traversal_retrieve(world["tree"], world["chunks"], q, DATASET, top_k=8)
-            .toPandas()
-        )
-        frontier = _oracle_traversal(world["pn"], world["pe"], q, 8, 0)
-        exp = _oracle_gather(world["pl"], world["pc"], frontier, q, 8)
-        assert got.chunk_id.tolist() == exp.chunk_id.tolist()
-        np.testing.assert_allclose(got.dist.values, exp.dist.values, rtol=1e-9)
+    for world in (world, world_overlap):
+        for q in qs:
+            got = (
+                traversal_retrieve(world["tree"], world["chunks"], q, DATASET, top_k=8)
+                .toPandas()
+            )
+            frontier = _oracle_traversal(world["pn"], world["pe"], q, 8, 0)
+            exp = _oracle_gather(world["pl"], world["pc"], frontier, q, 8)
+            assert got.chunk_id.tolist() == exp.chunk_id.tolist()
+            np.testing.assert_allclose(got.dist.values, exp.dist.values, rtol=1e-9)
 
 
 def test_traversal_levels_cap(world):
@@ -125,6 +154,30 @@ def test_traversal_levels_cap(world):
 def test_latest_root(world):
     root = latest_root(world["tree"].nodes, DATASET)
     assert root == world["pn"][world["pn"].kind == "root"].node_id.iloc[0]
+
+
+def test_head_matches_spark_stage1_and_root(world, two_datasets):
+    """The in-memory head answers stage 1 and the root exactly as the Spark
+    scans do: the same ids in the same order, down to the last ranked node."""
+    for tree, ds in ((world["tree"], DATASET), (two_datasets, "ds-21"), (two_datasets, "ds-22")):
+        head = tree.head()
+        assert head.node_id[head.root_rows(ds)].tolist() == [latest_root(tree.nodes, ds)]
+        for q in gen_query_vectors(seed=9, n=4, dim=DIM):
+            for k in (5, 1000):
+                want = [r.node_id for r in search_summary_nodes(tree.nodes, q, ds, k).collect()]
+                assert head_summary_nodes(head, q, ds, k) == want
+
+
+@pytest.mark.parametrize("bad", ["zero", "nan"])
+def test_degenerate_query_raises(world, bad):
+    """An all-zero or NaN query raises ValueError before the head loads."""
+    t = world["tree"]
+    tree = TileTree(nodes=t.nodes, edges=t.edges, links=t.links)
+    q = np.zeros(DIM) if bad == "zero" else np.full(DIM, np.nan)
+    for fn in (collapsed_retrieve, traversal_retrieve):
+        with pytest.raises(ValueError, match="finite and not all-zero"):
+            fn(tree, world["chunks"], q, DATASET)
+    assert tree._head is None
 
 
 def test_unknown_dataset_returns_empty(world):
