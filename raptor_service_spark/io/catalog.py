@@ -8,8 +8,17 @@ catalog service):
 
   table/
     data/<commit-uuid>/part-*.parquet     immutable data files
-    _snapshots/v000001.json               manifest: list of data dirs + lineage
+    _snapshots/v000001.json               manifest: data dirs, schema, row
+                                          count, lineage props
     _snapshots/CURRENT                    atomic pointer (os.replace)
+
+Like Iceberg's table metadata, each manifest carries the table schema as of
+its snapshot and the commit's row count, so the catalog never re-reads
+parquet for either: ``read`` applies the snapshot's schema (never infers),
+``append`` takes the table schema from the current manifest, and the row
+count is observed while the commit's own write runs. A commit therefore runs
+only the jobs of its write, and ``read``, ``exists`` and ``snapshots`` run
+none.
 
 Operations map 1:1 to Iceberg:
   append        -> AppendFiles commit
@@ -20,7 +29,7 @@ Operations map 1:1 to Iceberg:
   read(version) -> time travel / snapshot isolation
   snapshots     -> snapshot log with operation + row counts + properties
                    (per-partition lineage: each snapshot records the commit's
-                   files and row count — the resume checkpoint)
+                   files, schema and row count — the resume checkpoint)
 
 On a real cluster, swap this class for ``spark.table("catalog.db.tbl")`` +
 Iceberg SQL; every caller only touches the four methods above.
@@ -32,7 +41,9 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # --------------------------------------------------------------------------
 # Iceberg SQL twins
@@ -135,8 +146,17 @@ class SnapshotCatalog:
         with open(os.path.join(self._snapdir(table), f"v{v:06d}.json")) as f:
             return json.load(f)
 
+    def _schema(self, table: str, manifest: dict) -> StructType:
+        """The table schema as of ``manifest``'s snapshot."""
+        if "schema" not in manifest:
+            raise ValueError(
+                f"table {table} snapshot v{manifest['version']} has no schema "
+                "in its manifest"
+            )
+        return StructType.fromJson(manifest["schema"])
+
     def _commit(self, table: str, files: list[str], operation: str,
-                rows_written: int, props: dict | None = None) -> int:
+                written: dict, props: dict | None = None) -> int:
         """Atomic snapshot commit: write manifest, then os.replace the pointer.
 
         A crash before the pointer flip leaves the table at the previous
@@ -150,7 +170,7 @@ class SnapshotCatalog:
             "parent": v - 1,
             "operation": operation,
             "files": files,
-            "rows_written": rows_written,
+            **written,
             "props": props or {},
         }
         mpath = os.path.join(snapdir, f"v{v:06d}.json")
@@ -164,12 +184,18 @@ class SnapshotCatalog:
         os.replace(cur_tmp, os.path.join(snapdir, "CURRENT"))
         return v
 
-    def _write_data(self, table: str, df: DataFrame) -> tuple[str, int]:
+    def _write_data(self, table: str, df: DataFrame) -> tuple[str, dict]:
+        """Write ``df`` into a fresh data dir; returns the dir and what its
+        manifest records of the write: ``rows_written`` and ``schema``.
+
+        The row count is an Observation on the top node of the written plan,
+        so it is taken in the write's own result stage (each partition's
+        update applied once, task retries included) and costs no job."""
         commit_id = uuid.uuid4().hex[:12]
         path = os.path.join(self._tdir(table), "data", commit_id)
-        df.write.mode("overwrite").parquet(path)
-        rows = self.spark.read.parquet(path).count()  # metadata-only count
-        return path, rows
+        rows = Observation()
+        df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+        return path, {"rows_written": rows.get["n"], "schema": df.schema.jsonValue()}
 
     # ------------------------------------------------------------------ api
     def exists(self, table: str) -> bool:
@@ -182,12 +208,9 @@ class SnapshotCatalog:
         written and their rows read back NULL for the new columns; columns
         the append omits are filled with NULL. Without it, appends are
         normalized to the exact table schema (column order included)."""
-        from pyspark.sql import functions as F
-
         prev = self._manifest(table)
         if prev["files"]:
-            # latest commit's schema = current table schema (post-evolution)
-            schema = self.spark.read.parquet(prev["files"][-1]).schema
+            schema = self._schema(table, prev)
             cols = [f.name for f in schema.fields]
             if merge_schema:
                 types = {f.name: f.dataType for f in schema.fields}
@@ -204,22 +227,21 @@ class SnapshotCatalog:
                     props = {"schema_added_columns": added, **(props or {})}
             else:
                 df = df.select(*cols)
-        path, rows = self._write_data(table, df)
+        path, written = self._write_data(table, df)
         props = {"iceberg_sql": iceberg_append_sql(table), **(props or {})}
-        return self._commit(table, prev["files"] + [path], "append", rows, props)
+        return self._commit(table, prev["files"] + [path], "append", written, props)
 
     def overwrite(self, table: str, df: DataFrame, props: dict | None = None) -> int:
-        path, rows = self._write_data(table, df)
-        return self._commit(table, [path], "overwrite", rows, props)
+        path, written = self._write_data(table, df)
+        return self._commit(table, [path], "overwrite", written, props)
 
     def read(self, table: str, version: int | None = None) -> DataFrame:
         m = self._manifest(table, version)
         if not m["files"]:
             raise FileNotFoundError(f"table {table} has no snapshot")
-        # mergeSchema unions per-file schemas so add-column evolution reads
-        # NULL-filled history (Iceberg resolves this from table metadata; the
-        # parquet footer union is the local stand-in)
-        return self.spark.read.option("mergeSchema", "true").parquet(*m["files"])
+        # the snapshot's own schema, as Iceberg resolves it from table
+        # metadata: files written before an added column read it back NULL
+        return self.spark.read.schema(self._schema(table, m)).parquet(*m["files"])
 
     def merge(self, table: str, updates: DataFrame, key_cols: list[str],
               props: dict | None = None) -> int:
@@ -234,9 +256,9 @@ class SnapshotCatalog:
             merged = kept.unionByName(updates.select(*cur.columns))
         else:
             merged = updates
-        path, rows = self._write_data(table, merged)
+        path, written = self._write_data(table, merged)
         props = {"iceberg_sql": iceberg_merge_sql(table, key_cols), **(props or {})}
-        return self._commit(table, [path], "merge", rows, props)
+        return self._commit(table, [path], "merge", written, props)
 
     def insert_if_absent(self, table: str, rows_df: DataFrame, key_cols: list[str],
                          props: dict | None = None) -> int:
@@ -247,10 +269,10 @@ class SnapshotCatalog:
             merged = cur.unionByName(new.select(*cur.columns))
         else:
             merged = rows_df
-        path, rows = self._write_data(table, merged)
+        path, written = self._write_data(table, merged)
         props = {"iceberg_sql": iceberg_insert_if_absent_sql(table, key_cols),
                  **(props or {})}
-        return self._commit(table, [path], "insert_if_absent", rows, props)
+        return self._commit(table, [path], "insert_if_absent", written, props)
 
     def delete_where(self, table: str, predicate: str, props: dict | None = None) -> int:
         """DELETE FROM table WHERE predicate (copy-on-write; reference
@@ -260,14 +282,12 @@ class SnapshotCatalog:
         evaluates NULL (e.g. a three-valued comparison on a NULL column) are
         KEPT.  ``filter(NOT pred)`` would drop them too, so keep rows where
         the predicate is NULL or false — matching the recorded Iceberg twin."""
-        from pyspark.sql import functions as F
-
         cur = self.read(table)
         p = F.expr(predicate)
         kept = cur.filter(p.isNull() | ~p)
-        path, rows = self._write_data(table, kept)
+        path, written = self._write_data(table, kept)
         return self._commit(
-            table, [path], "delete", rows,
+            table, [path], "delete", written,
             {"predicate": predicate,
              "iceberg_sql": iceberg_delete_where_sql(table, predicate),
              **(props or {})},
@@ -286,8 +306,6 @@ class SnapshotCatalog:
         an anti-join Catalyst can broadcast (small batch) or shuffle (large
         backfill).
         """
-        from pyspark.sql import functions as F
-
         cur = self.read(table)
         k = keys.select(*on).dropDuplicates(on)
         if extra_predicate:
@@ -302,9 +320,9 @@ class SnapshotCatalog:
             )
         else:
             kept = cur.join(k, on, "left_anti")
-        path, rows = self._write_data(table, kept)
+        path, written = self._write_data(table, kept)
         return self._commit(
-            table, [path], "delete", rows,
+            table, [path], "delete", written,
             {"iceberg_sql": iceberg_delete_matching_sql(table, on, extra_predicate),
              **(props or {})},
         )
@@ -350,9 +368,9 @@ class SnapshotCatalog:
         total = sum(os.path.getsize(f) for f in files)
         n_out = max(1, math.ceil(total / target_file_bytes))
         df = self.read(table).repartition(n_out)
-        path, rows = self._write_data(table, df)
+        path, written = self._write_data(table, df)
         return self._commit(
-            table, [path], "compact", rows,
+            table, [path], "compact", written,
             {"files_before": len(files), "files_after": n_out,
              "iceberg_sql": iceberg_compact_sql(table, target_file_bytes),
              **(props or {})},

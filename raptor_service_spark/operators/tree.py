@@ -452,9 +452,13 @@ def build_tile_tree(spans_embedded: DataFrame, params: TreeParams | None = None)
     acc_edges: list[DataFrame] = []
     acc_links = [leaf_links]
 
+    # every level stays cached (parents are, by _ascend_one_level): returning
+    # the persisted edges and links keeps a request on the tree from
+    # re-running each level's window lineage
     def sink(level, parents, edges, links):
+        links = links.persist()
         acc_nodes.append(parents.select(*NODE_COLS))
-        acc_edges.append(edges)
+        acc_edges.append(edges.persist())
         acc_links.append(links)
         return links
 

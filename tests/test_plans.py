@@ -736,3 +736,50 @@ def test_retrieval_requests_run_a_bounded_number_of_jobs(spark):
         assert jobs(traversal_retrieve, q, f"retrieval-traversal-{i}") <= 4
     for df in (tree.nodes, tree.edges, tree.links, chunks, spans):
         df.unpersist()
+
+
+@pytest.mark.parametrize("overlap_kring", [0, 1])
+def test_in_memory_build_caches_its_levels(spark, overlap_kring):
+    """``build_tile_tree`` returns its levels cached: with no ``persist()``
+    by the caller, a warmed collapsed request runs at most 2 Spark jobs and
+    a traversal request at most 4, as on a persisted tree. Unpersisted
+    links or edges would re-run every level's window lineage per request
+    (11-12 jobs per collapsed request, about 30 with ``overlap_kring=1``)."""
+    from raptor_service_spark.datagen import gen_documents_df, gen_query_vectors
+    from raptor_service_spark.functions.vector import embed_spans
+    from raptor_service_spark.operators.chunking import explode_spans
+    from raptor_service_spark.operators.retrieval import (
+        collapsed_retrieve,
+        traversal_retrieve,
+    )
+    from raptor_service_spark.operators.tree import TreeParams, build_tile_tree
+
+    dim = 32
+    spans = embed_spans(explode_spans(gen_documents_df(spark, 40, seed=13)), dim=dim).persist()
+    tree = build_tile_tree(
+        spans,
+        TreeParams(
+            res_ladder=(6, 3, 0), summary_cap=16, salt_buckets=4, dim=dim,
+            overlap_kring=overlap_kring,
+        ),
+    )
+    chunks = spans.select("chunk_id", "doc_id", "idx", "text", "v").persist()
+    sc = spark.sparkContext
+
+    def jobs(fn, q, group):
+        group = f"{group}-k{overlap_kring}"
+        sc.setJobGroup(group, group)
+        try:
+            assert fn(tree, chunks, q, "ds-13").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    warm, *qs = gen_query_vectors(seed=31, n=3, dim=dim)
+    jobs(collapsed_retrieve, warm, "in-memory-warm-collapsed")
+    jobs(traversal_retrieve, warm, "in-memory-warm-traversal")
+    for i, q in enumerate(qs):
+        assert jobs(collapsed_retrieve, q, f"in-memory-collapsed-{i}") <= 2
+        assert jobs(traversal_retrieve, q, f"in-memory-traversal-{i}") <= 4
+    chunks.unpersist()
+    spans.unpersist()

@@ -52,7 +52,102 @@ def test_append_and_time_travel(spark, tmp_path):
     assert cat.read("t", version=v1).count() == 1  # time travel
     snaps = cat.snapshots("t")
     assert [s["version"] for s in snaps] == [v1, v2]
-    assert all("rows_written" in s for s in snaps)  # lineage metrics
+    assert [s["rows_written"] for s in snaps] == [1, 1]  # lineage metrics
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"catalog-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_catalog_runs_only_the_jobs_of_its_writes(spark, tmp_path):
+    """The manifest carries the schema and the row count: reads infer no
+    schema, an append reads no footer and a commit reads no rows back, so
+    a commit runs only its write's jobs and a read runs none."""
+    cat = SnapshotCatalog(str(tmp_path / "cat"), spark)
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string").persist()
+    df.count()
+    v1, n = _jobs(spark, lambda: cat.append("t", df))
+    assert n == 1
+    _, n = _jobs(spark, lambda: cat.append("t", df))  # into an existing table
+    assert n == 1
+    for op in (
+        lambda: cat.read("t"),
+        lambda: cat.read("t", version=v1),
+        lambda: cat.exists("t"),
+        lambda: cat.snapshots("t"),
+    ):
+        assert _jobs(spark, op)[1] == 0
+    _, n = _jobs(spark, lambda: cat.delete_where("t", "id = 1"))
+    assert n == 1
+    assert cat.read("t").count() == 2
+    df.unpersist()
+
+
+def test_rows_written_is_exact(spark, tmp_path):
+    """Every commit's ``rows_written`` equals the rows its snapshot added
+    (append) or holds (the rewriting operations), the 0-row writes
+    included: an empty frame, a filter that leaves nothing, a delete of
+    every row."""
+    cat = SnapshotCatalog(str(tmp_path / "cat"), spark)
+
+    def rows(*ids):
+        return spark.createDataFrame([(i, f"s{i}") for i in ids], "id int, s string")
+
+    ops = [
+        ("append", lambda: cat.append("t", rows(1, 2, 3))),
+        ("append", lambda: cat.append("t", rows())),
+        ("append", lambda: cat.append("t", rows(4, 5).filter("id > 99"))),
+        ("append", lambda: cat.append("t", rows(4, 5))),
+        ("merge", lambda: cat.merge("t", rows(5, 6), ["id"])),
+        ("insert_if_absent", lambda: cat.insert_if_absent("t", rows(6, 7), ["id"])),
+        ("delete", lambda: cat.delete_where("t", "id = 1")),
+        ("delete", lambda: cat.delete_matching("t", rows(2, 3), ["id"])),
+        ("compact", lambda: cat.compact("t")),
+        ("overwrite", lambda: cat.overwrite("t", rows(1, 2))),
+        ("delete", lambda: cat.delete_where("t", "id > 0")),
+        ("append", lambda: cat.append("t", rows(8))),
+    ]
+    held = 0
+    for op, run in ops:
+        v = run()
+        m = cat._manifest("t", v)
+        assert m["operation"] == op
+        now = cat.read("t", version=v).count()
+        assert m["rows_written"] == (now - held if op == "append" else now), (op, m)
+        held = now
+    assert held == 1
+    # a table created by an empty append keeps its schema
+    cat.append("e", rows())
+    assert cat._manifest("e")["rows_written"] == 0
+    assert cat.read("e").columns == ["id", "s"] and cat.read("e").count() == 0
+
+
+def test_manifest_without_schema_raises(spark, tmp_path):
+    import json
+    import os
+
+    cat = SnapshotCatalog(str(tmp_path / "cat"), spark)
+    v = cat.append("t", spark.createDataFrame([(1, "a")], "id int, s string"))
+    path = os.path.join(cat._snapdir("t"), f"v{v:06d}.json")
+    with open(path) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="table t "):
+        cat.read("t")
+    with pytest.raises(ValueError, match="table t "):
+        cat.append("t", spark.createDataFrame([(2, "b")], "id int, s string"))
 
 
 def test_merge_upsert_semantics(spark, tmp_path):
@@ -354,6 +449,12 @@ def test_schema_evolution_add_column(spark, tmp_path):
     assert got == {(1, None), (2, 9.5), (3, None)}
     # pre-evolution snapshot time-travels WITHOUT the new column
     assert "score" not in cat.read("t", version=v2 - 1).columns
+    # each snapshot records its own schema: the union from the evolving append on
+    names = [
+        [f["name"] for f in cat._manifest("t", v)["schema"]["fields"]]
+        for v in (v2 - 1, v2, v2 + 1)
+    ]
+    assert names == [["id", "s"], ["id", "s", "score"], ["id", "s", "score"]]
 
 
 def test_delete_matching_join_based(spark, tmp_path):
