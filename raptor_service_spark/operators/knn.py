@@ -47,6 +47,7 @@ MIN_CANDIDATES_FACTOR = 32
 MAX_RING = 8
 _RINGS = tuple(1 << i for i in range(MAX_RING.bit_length()))
 ANN_PFX_RES = 3  # 64 coarse directories for the partitioned index layout
+WRITE_SALTS = 32  # hash fan-out of each pfx directory in a wide index write
 
 
 def _projection_basis(dim: int) -> np.ndarray:
@@ -340,18 +341,16 @@ def build_ann_index(
     )
 
 
-def _write_ann_index(
-    index: DataFrame, path: str, mode: str, npart: int | None, salts: int
-) -> None:
+def _write_ann_index(index: DataFrame, path: str, mode: str, npart: int | None) -> None:
     out = index
     if npart:
-        out = out.repartition(npart, F.col("pfx"), F.pmod(F.xxhash64("id"), F.lit(salts)))
+        out = out.repartition(
+            npart, F.col("pfx"), F.pmod(F.xxhash64("id"), F.lit(WRITE_SALTS))
+        )
     out.sortWithinPartitions("pfx", "ann_cell").write.mode(mode).partitionBy("pfx").parquet(path)
 
 
-def write_ann_index(
-    index: DataFrame, path: str, npart: int | None = None, salts: int = 32
-) -> None:
+def write_ann_index(index: DataFrame, path: str, npart: int | None = None) -> None:
     """Persist the ANN index partitioned by coarse cell.
 
     Default is the NARROW write: each scan task locally sorts by (pfx,
@@ -360,14 +359,12 @@ def write_ann_index(
     (pfx, salt) first — fewer, bigger files per partition and explicit
     hot-cell spreading (the Iceberg write-distribution mode you'd pick on a
     real cluster where shuffle bandwidth scales with executors; the salt
-    spreads hot cells such as the empty-text mega-cell over ``salts``
+    spreads hot cells such as the empty-text mega-cell over ``WRITE_SALTS``
     writers)."""
-    _write_ann_index(index, path, "overwrite", npart, salts)
+    _write_ann_index(index, path, "overwrite", npart)
 
 
-def append_ann_index(
-    new_index: DataFrame, path: str, npart: int | None = None, salts: int = 32
-) -> None:
+def append_ann_index(new_index: DataFrame, path: str, npart: int | None = None) -> None:
     """Incremental index ingest: append new vectors into the SAME pfx
     directory layout (dynamic partition append — new files land inside the
     existing coarse-cell directories, each internally sorted by (pfx,
@@ -376,7 +373,7 @@ def append_ann_index(
     union (candidate scans are layout-independent); callers must append
     NEW ids only — idempotent re-ingest goes through a catalog merge
     instead."""
-    _write_ann_index(new_index, path, "append", npart, salts)
+    _write_ann_index(new_index, path, "append", npart)
 
 
 def plan_candidate_cells(

@@ -38,17 +38,17 @@ from raptor_service_spark.geo.grid import cell_encode_col, cell_parent_col
 from raptor_service_spark.schema import N_DIM
 
 NODE_COLS = ("tree_id", "node_id", "dataset_id", "level", "kind", "cell", "text", "v", "ord")
+# greedy token budget per summary group (analog of the reference's 9500-token
+# request packing, voyage_client.py:253-280), scaled to this corpus's ~10-word
+# spans
+SUMMARY_TOKEN_BUDGET = 320
+SUMMARY_MAX_CHARS = 512  # reference summarizer max_tokens=512 analog
 
 
 @dataclass
 class TreeParams:
     res_ladder: tuple[int, ...] = (8, 5, 2, 0)  # leaf res first, coarsening upward
     summary_cap: int = 32  # hard count cap on children packed per summary
-    # greedy token budget per summary group (analog of the reference's
-    # 9500-token request packing, voyage_client.py:253-280), scaled to this
-    # corpus's ~10-word spans
-    summary_token_budget: int = 320
-    summary_max_chars: int = 512  # reference summarizer max_tokens=512 analog
     salt_buckets: int = 16  # phase-1 salt fan-out for hot cells
     dim: int = N_DIM
     # GMM soft multi-membership emulation (reference utils/cluster.py:45-53:
@@ -66,7 +66,7 @@ class TreeParams:
     #   summarize_fn(texts: Column) -> Column       string; ``texts`` is the
     #     ordered array of child texts packed for one summary group
     # Defaults (None) = the deterministic hermetic fakes every oracle and
-    # parity test pins: hash_embed_udf(dim) and first-``summary_max_chars``
+    # parity test pins: hash_embed_udf(dim) and first-``SUMMARY_MAX_CHARS``
     # of the newline-joined children.
     embed_fn: object | None = None
     summarize_fn: object | None = None
@@ -77,7 +77,7 @@ class TreeParams:
     def resolved_summarize_fn(self):
         if self.summarize_fn is not None:
             return self.summarize_fn
-        return lambda texts: fake_summarize(texts, self.summary_max_chars)
+        return lambda texts: fake_summarize(texts, SUMMARY_MAX_CHARS)
 
 
 @dataclass(frozen=True)
@@ -244,6 +244,15 @@ def _salted_capped_collect(
     )
 
 
+def _kind_col():
+    """Per-tree root promotion (reference :363-365 — one build per dataset
+    there; here several datasets can share one pass) over a level's nodes,
+    one row per group: a tree whose level has exactly one group roots there,
+    while other trees keep ascending."""
+    groups = F.count("*").over(Window.partitionBy("tree_id", "dataset_id"))
+    return F.when(groups == 1, F.lit("root")).otherwise(F.lit("summary"))
+
+
 def _ascend_one_level(
     cur: DataFrame,
     cur_links: DataFrame,
@@ -297,14 +306,9 @@ def _ascend_one_level(
         )
         cur = cur.unionByName(sec.select(*cur.columns))
 
-    # root promotion is PER TREE (reference :363-365 — one build per dataset
-    # there; here several datasets can share one pass): a tree whose level
-    # has exactly one group roots, while other trees keep ascending.
-    per_tree_groups = F.count("*").over(Window.partitionBy("tree_id", "dataset_id"))
-
     def _make_parents(cur_df: DataFrame) -> DataFrame:
         grouped = _salted_capped_collect(
-            cur_df, p.summary_cap, p.salt_buckets, p.summary_token_budget
+            cur_df, p.summary_cap, p.salt_buckets, SUMMARY_TOKEN_BUDGET
         )
         return (
             grouped.select(
@@ -319,10 +323,7 @@ def _ascend_one_level(
             .withColumn(
                 "node_id", summary_node_id(F.col("tree_id"), F.col("level"), F.col("cell"))
             )
-            .withColumn(
-                "kind",
-                F.when(per_tree_groups == 1, F.lit("root")).otherwise(F.lit("summary")),
-            )
+            .withColumn("kind", _kind_col())
             .withColumn(
                 "ord", F.concat_ws("#", F.lit(f"L{level}"), F.col("cell").cast("string"))
             )
@@ -519,23 +520,37 @@ def _ascend_in_catalog(
     )
 
 
-def _resume(catalog, prefix: str, p: TreeParams, top: int, props: dict) -> TileTree:
-    """Continue the ladder above the committed level ``top``: roll back the
-    edge and link rows above it (a crash can leave them without their
-    nodes), then ascend from its non-root nodes (a root never re-ascends, so
-    a complete tree's empty frontier ends the ladder at once)."""
-    for t in (f"{prefix}_edges", f"{prefix}_links"):
-        if catalog.exists(t):
-            catalog.delete_where(
-                t, f"level > {top}", props={"resume_cleanup": str(top), **props}
-            )
+def _frontier(catalog, prefix: str, top: int) -> tuple[DataFrame, DataFrame]:
+    """The committed level ``top``'s non-root nodes (cached) and its links,
+    the frontier a partial rebuild ascends from. A root never re-ascends, so
+    a complete tree's empty frontier ends the ladder at once."""
     cur = (
         catalog.read(f"{prefix}_nodes")
         .filter((F.col("level") == top) & (F.col("kind") != "root"))
         .persist()
     )
-    cur_links = catalog.read(f"{prefix}_links").filter(F.col("level") == top)
-    return _ascend_in_catalog(catalog, prefix, p, cur, cur_links, top, props)
+    return cur, catalog.read(f"{prefix}_links").filter(F.col("level") == top)
+
+
+def _truncate(catalog, prefix: str, top: int, props: dict, dirty: DataFrame | None = None) -> None:
+    """Drop every row above level ``top``, plus the rows of the ``dirty``
+    nodes (a ``node_id`` column), in one copy-on-write delete per table:
+    nodes on ``node_id``, edges on ``parent_id``, links on ``node_id``.
+
+    Each table's keys are its own ids above ``top``, so rows that a crash
+    left above the last complete level go too, with or without their nodes.
+    Ids encode their level (summary ids hash ``tree|level|cell``, leaf ids
+    are ``…::leaf::…``), so a key matches no row of another level. Without
+    ``dirty`` the nodes table is left alone: nothing sits above its top
+    level."""
+    for table, key in (("nodes", "node_id"), ("edges", "parent_id"), ("links", "node_id")):
+        t = f"{prefix}_{table}"
+        if not catalog.exists(t) or (dirty is None and table == "nodes"):
+            continue
+        keys = catalog.read(t).filter(F.col("level") > top).select(key)
+        if dirty is not None:
+            keys = keys.unionByName(dirty.select(F.col("node_id").alias(key)))
+        catalog.delete_matching(t, keys, [key], props=props)
 
 
 def ingest_incremental(
@@ -545,26 +560,26 @@ def ingest_incremental(
     prefix: str = "tree",
 ) -> TileTree:
     """Incremental rebuild-on-ingest (reference build_tree_service.py:85-161
-    re-run semantics, done without touching clean data): append the new
-    leaves, recompute ONLY the level-1 cells they land in (the filter on the
-    leaf table is a partition predicate on a cell-partitioned layout — old
-    leaves in clean cells are never read), then rebuild the upper ladder
-    (levels >= 2) by resuming the checkpointed build from the merged level
-    1. Upper levels shrink 4^dres per step, so they are a vanishing fraction
-    of the corpus; the expensive stage — leaves -> level 1 — is the one that
-    stays incremental. ``stats`` holds the rebuilt levels (>= 2).
+    re-run semantics): append the new leaves, recompute ONLY the level-1
+    cells they land in, ``_truncate`` to level 1 with those cells' stale
+    nodes (ids are deterministic per (tree, level, cell), so the recomputed
+    ids are exactly the stale ones), commit them like a build level, then
+    ascend from the merged level 1 as a resume does. Finding the dirty
+    cells' leaves filters on a computed parent cell, so every leaf is
+    scanned: the tree tables are not partitioned by cell. ``stats`` holds
+    the rebuilt levels (>= 2).
 
     The result is IDENTICAL to a full rebuild over the union corpus
-    (pytest-pinned): node ids are deterministic per (tree, level, cell) and
-    each dirty cell re-aggregates its COMPLETE child set, so summaries,
-    token-budget packs, edges, and provenance links come out the same.
+    (pytest-pinned): each dirty cell re-aggregates its COMPLETE child set,
+    so summaries, token-budget packs, edges, and provenance links come out
+    the same.
 
     Precondition: level 1 is a genuine coarsening (no stall-forced single
     group), which holds for any real geography; the restricted ascend
     disables the stall guard explicitly.
     """
     p = params or TreeParams()
-    t_nodes, t_edges, t_links = f"{prefix}_nodes", f"{prefix}_edges", f"{prefix}_links"
+    t_nodes = f"{prefix}_nodes"
     ladder = list(p.res_ladder)
     ingest = {"op": "ingest"}
 
@@ -588,7 +603,7 @@ def ingest_incremental(
     leaves_dirty = leaves_all.filter(
         cell_parent_col(F.col("cell"), ladder[0], ladder[1]).isin(dirty)
     ).persist()
-    links0 = catalog.read(t_links).filter(F.col("level") == 0)
+    links0 = catalog.read(f"{prefix}_links").filter(F.col("level") == 0)
     n_guard = leaves_dirty.count() + 1  # stall guard disabled (see docstring)
     lvl1_dirty, edges, links, _, forced = _ascend_one_level(
         leaves_dirty, links0, 1, ladder[0], ladder[1], p, n_guard
@@ -597,40 +612,21 @@ def ingest_incremental(
     # kind is decided globally below (the restricted set must not self-promote)
     parents = lvl1_dirty.withColumn("kind", F.lit("summary"))
 
-    # 4. merge level 1: recomputed ids are deterministic per cell, so the
-    # delete set is exactly the dirty cells / their parent ids. Deletes are
-    # JOIN-based (catalog.delete_matching): the key sets ride an anti-join
-    # instead of a collected IN-list SQL literal, so a large backfill never
-    # builds a multi-MB SQL string (Catalyst broadcasts the small-batch case
-    # on its own).
-    dirty_cells = parents.select("cell").distinct()
-    pids = parents.select("node_id")
-    catalog.delete_matching(t_nodes, dirty_cells, ["cell"],
-                            extra_predicate="level = 1", props=ingest)
-    catalog.append(t_nodes, parents.select(*NODE_COLS), props={"level": 1, **ingest})
-    if catalog.exists(t_edges):
-        catalog.delete_matching(
-            t_edges, pids.withColumnRenamed("node_id", "parent_id"),
-            ["parent_id"], extra_predicate="level = 1", props=ingest)
-    catalog.append(t_edges, edges, props={"level": 1, **ingest})
-    catalog.delete_matching(t_links, pids, ["node_id"],
-                            extra_predicate="level = 1", props=ingest)
-    catalog.append(t_links, links, props={"level": 1, **ingest})
+    # 4. replace the dirty level-1 cells and drop every level above
+    _truncate(catalog, prefix, 1, ingest, dirty=parents)
+    _commit_level(catalog, prefix, 1, parents, edges, links, ingest)
     leaves_dirty.unpersist()
     lvl1_dirty.unpersist()
 
-    # 5. rebuild levels >= 2 from the merged level 1 (tiny tables). Their
-    # nodes go first, so level 1 is the committed top a resume continues from.
-    catalog.delete_where(t_nodes, "level >= 2", props=ingest)
-    lvl1 = catalog.read(t_nodes).filter(F.col("level") == 1)
-    # per-tree root promotion at level 1 (matches _ascend_one_level): a tree
-    # whose level 1 collapsed to one group roots there and leaves the
-    # ascent; a stale root in a tree that now has several groups demotes
-    per_tree = F.count("*").over(Window.partitionBy("tree_id", "dataset_id"))
-    rekinded = lvl1.withColumn(
-        "new_kind", F.when(per_tree == 1, F.lit("root")).otherwise(F.lit("summary"))
+    # 5. root promotion over the whole merged level 1: a tree whose level 1
+    # collapsed to one group roots there and leaves the ascent; a stale root
+    # in a tree that now has several groups demotes
+    changed = (
+        catalog.read(t_nodes)
+        .filter(F.col("level") == 1)
+        .withColumn("new_kind", _kind_col())
+        .filter(F.col("kind") != F.col("new_kind"))
     )
-    changed = rekinded.filter(F.col("kind") != F.col("new_kind"))
     if changed.limit(1).count():
         catalog.merge(
             t_nodes,
@@ -638,7 +634,9 @@ def ingest_incremental(
             ["node_id"],
             props=ingest,
         )
-    return _resume(catalog, prefix, p, 1, ingest)
+
+    # 6. rebuild levels >= 2 from the merged level 1
+    return _ascend_in_catalog(catalog, prefix, p, *_frontier(catalog, prefix, 1), 1, ingest)
 
 
 def build_tile_tree_checkpointed(
@@ -651,11 +649,10 @@ def build_tile_tree_checkpointed(
     """Checkpointed build: each level is an atomic snapshot commit of the
     ``{prefix}_nodes/_edges/_links`` tables; a rerun after a crash resumes
     from the last COMPLETE level (nodes are committed last, so a level is
-    complete iff its nodes exist; partial edge/link commits above it are
-    rolled back with a copy-on-write delete). A fresh build
-    (``resume=False``) into a catalog that already holds ``{prefix}_nodes``
-    raises ``ValueError`` before writing anything: appending would double
-    every table.
+    complete iff its nodes exist; ``_truncate`` drops the edge/link commits
+    above it). A fresh build (``resume=False``) into a catalog that already
+    holds ``{prefix}_nodes`` raises ``ValueError`` before writing anything:
+    appending would double every table.
     """
     p = params or TreeParams()
     if catalog.exists(f"{prefix}_nodes"):
@@ -664,8 +661,9 @@ def build_tile_tree_checkpointed(
                 f"catalog already holds {prefix}_nodes; resume it (resume=True) "
                 "or build into a fresh catalog or prefix"
             )
-        top = catalog.read(f"{prefix}_nodes").agg(F.max("level")).collect()[0][0]
-        return _resume(catalog, prefix, p, int(top), {})
+        top = int(catalog.read(f"{prefix}_nodes").agg(F.max("level")).collect()[0][0])
+        _truncate(catalog, prefix, top, {"resume_cleanup": str(top)})
+        return _ascend_in_catalog(catalog, prefix, p, *_frontier(catalog, prefix, top), top, {})
     leaves, leaf_links = _leaves(spans_embedded, p)
     _commit_level(catalog, prefix, 0, leaves, None, leaf_links)
     return _ascend_in_catalog(catalog, prefix, p, leaves, leaf_links, 0, {})

@@ -119,7 +119,7 @@ def test_grid_knn_falls_back_when_sparse(emb, spark):
 
 
 @pytest.mark.parametrize("bad", ["zero", "nan"])
-def test_degenerate_query_raises_before_any_job(spark, emb, emb_pd, bad):
+def test_degenerate_query_raises_before_any_job(emb, emb_pd, bad, count_jobs):
     """An all-zero or non-finite query has no cosine: every kernel raises
     ValueError on the driver instead of failing a task (DIVIDE_BY_ZERO under
     ANSI) or ranking NaN distances. The multi-query kernels check every row."""
@@ -136,16 +136,13 @@ def test_degenerate_query_raises_before_any_job(spark, emb, emb_pd, bad):
         lambda: grid_knn_multi(index, qs, ["g", "b"], 5, res=4, cell_counts={}).collect(),
         lambda: brute_force_knn_np(mat, emb_pd.id.to_numpy(), q, 5),
     ]
-    sc = spark.sparkContext
-    group = f"degenerate-query-{bad}"
-    sc.setJobGroup(group, group)
-    try:
+
+    def run():
         for call in calls:
             with pytest.raises(ValueError, match="finite and not all-zero"):
                 call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    assert count_jobs(run)[1] == 0
 
 
 def test_brute_force_np_matches_spark(emb, emb_pd):

@@ -458,7 +458,7 @@ def test_write_ann_index_spreads_hot_cell_over_writers(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from raptor_service_spark.operators.knn import write_ann_index
+    from raptor_service_spark.operators.knn import WRITE_SALTS, write_ann_index
 
     n = 4000
     idx = spark.range(n).select(
@@ -468,11 +468,11 @@ def test_write_ann_index_spreads_hot_cell_over_writers(spark, tmp_path):
         F.array(*[F.rand(seed=1) for _ in range(8)]).alias("v"),
     )
     path = str(tmp_path / "ann_idx")
-    write_ann_index(idx, path, npart=8, salts=32)
+    write_ann_index(idx, path, npart=8)
     hot_files = glob.glob(f"{path}/pfx=7/*.parquet")
     assert len(hot_files) >= 2  # hot cell spread across writer tasks
     # plan shape of the wide-write distribution
-    out = idx.repartition(8, F.col("pfx"), F.pmod(F.xxhash64("id"), F.lit(32)))
+    out = idx.repartition(8, F.col("pfx"), F.pmod(F.xxhash64("id"), F.lit(WRITE_SALTS)))
     plan = _plan(out.sortWithinPartitions("pfx", "ann_cell"))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "xxhash64" in plan.split("Exchange hashpartitioning")[1][:300]
@@ -695,7 +695,7 @@ def test_retrieval_stages_are_take_ordered_not_global_sort(spark, tmp_path):
         assert not re.search(r"Sort \[[^\]]*\], true", plan), plan
 
 
-def test_retrieval_requests_run_a_bounded_number_of_jobs(spark):
+def test_retrieval_requests_run_a_bounded_number_of_jobs(spark, count_jobs):
     """Once the tree head is loaded, a collapsed request runs at most 2 Spark
     jobs (the leaf gather) and a traversal request at most 4 (the hop out
     of level 1, then the gather): the rankings above level 1 run in driver
@@ -719,27 +719,23 @@ def test_retrieval_requests_run_a_bounded_number_of_jobs(spark):
     tree.links = tree.links.persist()
     chunks = spans.select("chunk_id", "doc_id", "idx", "text", "v").persist()
     assert tree.levels == 2  # root -> level 1 in the head, then one hop to the leaves
-    sc = spark.sparkContext
 
-    def jobs(fn, q, group):
-        sc.setJobGroup(group, group)
-        try:
-            assert fn(tree, chunks, q, "ds-13").collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+    def jobs(fn, q):
+        rows, n = count_jobs(lambda: fn(tree, chunks, q, "ds-13").collect())
+        assert rows
+        return n
 
     warm, *qs = gen_query_vectors(seed=31, n=3, dim=dim)
-    jobs(collapsed_retrieve, warm, "retrieval-warm-up")
-    for i, q in enumerate(qs):
-        assert jobs(collapsed_retrieve, q, f"retrieval-collapsed-{i}") <= 2
-        assert jobs(traversal_retrieve, q, f"retrieval-traversal-{i}") <= 4
+    jobs(collapsed_retrieve, warm)
+    for q in qs:
+        assert jobs(collapsed_retrieve, q) <= 2
+        assert jobs(traversal_retrieve, q) <= 4
     for df in (tree.nodes, tree.edges, tree.links, chunks, spans):
         df.unpersist()
 
 
 @pytest.mark.parametrize("overlap_kring", [0, 1])
-def test_in_memory_build_caches_its_levels(spark, overlap_kring):
+def test_in_memory_build_caches_its_levels(spark, count_jobs, overlap_kring):
     """``build_tile_tree`` returns its levels cached: with no ``persist()``
     by the caller, a warmed collapsed request runs at most 2 Spark jobs and
     a traversal request at most 4, as on a persisted tree. Unpersisted
@@ -764,22 +760,17 @@ def test_in_memory_build_caches_its_levels(spark, overlap_kring):
         ),
     )
     chunks = spans.select("chunk_id", "doc_id", "idx", "text", "v").persist()
-    sc = spark.sparkContext
 
-    def jobs(fn, q, group):
-        group = f"{group}-k{overlap_kring}"
-        sc.setJobGroup(group, group)
-        try:
-            assert fn(tree, chunks, q, "ds-13").collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+    def jobs(fn, q):
+        rows, n = count_jobs(lambda: fn(tree, chunks, q, "ds-13").collect())
+        assert rows
+        return n
 
     warm, *qs = gen_query_vectors(seed=31, n=3, dim=dim)
-    jobs(collapsed_retrieve, warm, "in-memory-warm-collapsed")
-    jobs(traversal_retrieve, warm, "in-memory-warm-traversal")
-    for i, q in enumerate(qs):
-        assert jobs(collapsed_retrieve, q, f"in-memory-collapsed-{i}") <= 2
-        assert jobs(traversal_retrieve, q, f"in-memory-traversal-{i}") <= 4
+    jobs(collapsed_retrieve, warm)
+    jobs(traversal_retrieve, warm)
+    for q in qs:
+        assert jobs(collapsed_retrieve, q) <= 2
+        assert jobs(traversal_retrieve, q) <= 4
     chunks.unpersist()
     spans.unpersist()

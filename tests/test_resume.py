@@ -55,30 +55,16 @@ def test_append_and_time_travel(spark, tmp_path):
     assert [s["rows_written"] for s in snaps] == [1, 1]  # lineage metrics
 
 
-def _jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran), counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"catalog-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_catalog_runs_only_the_jobs_of_its_writes(spark, tmp_path):
+def test_catalog_runs_only_the_jobs_of_its_writes(spark, tmp_path, count_jobs):
     """The manifest carries the schema and the row count: reads infer no
     schema, an append reads no footer and a commit reads no rows back, so
     a commit runs only its write's jobs and a read runs none."""
     cat = SnapshotCatalog(str(tmp_path / "cat"), spark)
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string").persist()
     df.count()
-    v1, n = _jobs(spark, lambda: cat.append("t", df))
+    v1, n = count_jobs(lambda: cat.append("t", df))
     assert n == 1
-    _, n = _jobs(spark, lambda: cat.append("t", df))  # into an existing table
+    _, n = count_jobs(lambda: cat.append("t", df))  # into an existing table
     assert n == 1
     for op in (
         lambda: cat.read("t"),
@@ -86,8 +72,8 @@ def test_catalog_runs_only_the_jobs_of_its_writes(spark, tmp_path):
         lambda: cat.exists("t"),
         lambda: cat.snapshots("t"),
     ):
-        assert _jobs(spark, op)[1] == 0
-    _, n = _jobs(spark, lambda: cat.delete_where("t", "id = 1"))
+        assert count_jobs(op)[1] == 0
+    _, n = count_jobs(lambda: cat.delete_where("t", "id = 1"))
     assert n == 1
     assert cat.read("t").count() == 2
     df.unpersist()
@@ -251,6 +237,19 @@ def _spans_for(spark, n, seed, dim=16):
     return embed_spans(explode_spans(docs), dim=dim)
 
 
+class _CommitLog(SnapshotCatalog):
+    """A catalog that logs (table, operation, level prop) of every commit,
+    in commit order across its tables."""
+
+    def __init__(self, root, spark):
+        super().__init__(root, spark)
+        self.log = []
+
+    def _commit(self, table, files, operation, written, props=None):
+        self.log.append((table, operation, (props or {}).get("level")))
+        return super()._commit(table, files, operation, written, props)
+
+
 def test_ingest_incremental_matches_full_rebuild(spark, tmp_path):
     """build(A) + ingest(B) == build(A ∪ B), table for table — summaries,
     budget packs, edges, and provenance links included (deterministic ids +
@@ -260,8 +259,9 @@ def test_ingest_incremental_matches_full_rebuild(spark, tmp_path):
     a = _spans_for(spark, 30, seed=70)
     b = _spans_for(spark, 12, seed=71)
 
-    cat = SnapshotCatalog(str(tmp_path / "cat_inc"), spark)
+    cat = _CommitLog(str(tmp_path / "cat_inc"), spark)
     build_tile_tree_checkpointed(a, PARAMS, catalog=cat, prefix="t", resume=False)
+    n_build = len(cat.log)
     inc = ingest_incremental(b, cat, PARAMS, prefix="t")
 
     full = build_tile_tree(a.unionByName(b), PARAMS)
@@ -269,6 +269,13 @@ def test_ingest_incremental_matches_full_rebuild(spark, tmp_path):
     # dirty-cell recompute really fired: level-1 snapshots carry ingest ops
     ops = [s["props"].get("op") for s in cat.snapshots("t_nodes")]
     assert "ingest" in ops
+    # the ingest drops its dirty subtree with one copy-on-write delete per
+    # table, then commits level 1 as a build does, nodes last
+    ingest_log = cat.log[n_build:]
+    for t in ("t_nodes", "t_edges", "t_links"):
+        assert [op for table, op, _ in ingest_log if table == t].count("delete") == 1, t
+    level1 = [table for table, op, level in ingest_log if op == "append" and level == 1]
+    assert level1 == ["t_links", "t_edges", "t_nodes"]
 
 
 def test_ingest_incremental_demotes_stale_root(spark, tmp_path):

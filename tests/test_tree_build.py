@@ -16,7 +16,12 @@ from raptor_service_spark.datagen import gen_documents_df
 from raptor_service_spark.functions.vector import embed_spans
 from raptor_service_spark.geo.grid import cell_encode_np, cell_parent_np
 from raptor_service_spark.operators.chunking import explode_spans
-from raptor_service_spark.operators.tree import TileTree, TreeParams, build_tile_tree
+from raptor_service_spark.operators.tree import (
+    SUMMARY_MAX_CHARS,
+    TileTree,
+    TreeParams,
+    build_tile_tree,
+)
 
 PARAMS = TreeParams(res_ladder=(6, 3, 0), summary_cap=16, salt_buckets=4, dim=32)
 
@@ -144,7 +149,7 @@ def test_build_is_deterministic(corpus):
 
 def test_summary_text_capped_and_deterministic(tree):
     summaries = tree.nodes.filter("kind != 'leaf'").select("text").toPandas()
-    assert (summaries.text.str.len() <= PARAMS.summary_max_chars).all()
+    assert (summaries.text.str.len() <= SUMMARY_MAX_CHARS).all()
     assert (summaries.text.str.len() > 0).all()
 
 
