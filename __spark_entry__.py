@@ -1901,8 +1901,9 @@ def _py_token_count(t: str) -> int:
 
 
 def _py_budget_pack(items: list[dict], cap: int = 32, budget: int = 320) -> list[dict]:
-    """Twin of operators.tree._budget_slice: longest ord-prefix within
-    ``cap`` children and ``budget`` tokens, >= 1 item."""
+    """Twin of operators.tree._budget_slice over ord-sorted ``items``: one
+    running-sum pass keeps the longest prefix within ``cap`` children and
+    ``budget`` tokens (tokens >= 1 each, so the sum only rises), >= 1 item."""
     packed, cum = [], 0
     for it in items[: min(cap, budget)]:
         cum += it["tok"]

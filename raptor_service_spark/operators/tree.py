@@ -189,22 +189,23 @@ def _leaf_nodes(spans: DataFrame, res_leaf: int) -> DataFrame:
 
 
 def _budget_slice(items, cap: int, budget: int):
-    """Longest ord-prefix of sorted ``items`` within ``cap`` children AND
-    ``budget`` tokens (>= 1 item always, so an oversized single child still
-    packs). Tokens are counted as max(token_cnt, 1), which also bounds the
-    prefix length by ``budget`` — the count-slice below keeps the O(n^2)
-    prefix-sum lambda on a bounded array even for hot cells."""
+    """Longest prefix of the ord-sorted array column ``items`` within ``cap``
+    children AND ``budget`` tokens (>= 1 item always, so an oversized single
+    child still packs). Tokens count as max(token_cnt, 1), so the running sum
+    rises with every item, no more than ``budget`` items fit, and one
+    ``aggregate`` pass counting the items kept within budget gives the prefix
+    length. ``items`` is read twice: pass a column, not the sort behind it."""
     counted = F.slice(items, 1, min(cap, budget))
-    packed = F.filter(
+    fits = F.aggregate(
         counted,
-        lambda x, i: F.aggregate(
-            F.slice(counted, F.lit(1), i + F.lit(1)),
-            F.lit(0).cast("long"),
-            lambda a, y: a + y["tok"],
-        )
-        <= F.lit(budget),
+        F.struct(F.lit(0).cast("long").alias("tok"), F.lit(0).alias("n")),
+        lambda acc, y: F.struct(
+            (acc["tok"] + y["tok"]).alias("tok"),
+            (acc["n"] + (acc["tok"] + y["tok"] <= budget).cast("int")).alias("n"),
+        ),
+        lambda acc: acc["n"],
     )
-    return F.when(F.size(packed) > 0, packed).otherwise(F.slice(items, 1, 1))
+    return F.slice(counted, 1, F.greatest(fits, F.lit(1)))
 
 
 def _salted_capped_collect(
@@ -212,7 +213,8 @@ def _salted_capped_collect(
 ) -> DataFrame:
     """Two-phase skew-safe 'first children by ord' per (tree_id, parent_cell),
     greedily packed to ``token_budget`` tokens (reference voyage_client.py:
-    253-280 request packing) under a ``cap`` count bound.
+    253-280 request packing) under a ``cap`` count bound. Each phase sorts
+    its collected children once, then packs them in one pass.
 
     Budget-prefix-by-order is associative exactly like top-K: an item in the
     global packed prefix has an in-bucket cumulative token sum no larger than
@@ -226,31 +228,30 @@ def _salted_capped_collect(
         F.col("text"),
         F.greatest(token_count(F.col("text")), F.lit(1)).cast("long").alias("tok"),
     )
+    packed = _budget_slice(F.col("items"), cap, token_budget)
     p1 = (
         cur.withColumn("salt", F.pmod(F.xxhash64("node_id"), F.lit(salt_buckets)))
         .groupBy("tree_id", "dataset_id", "parent_cell", "salt")
+        .agg(F.array_sort(F.collect_list(item)).alias("items"), F.count("*").alias("cnt"))
+        .withColumn("items", packed)
+    )
+    return (
+        p1.groupBy("tree_id", "dataset_id", "parent_cell")
         .agg(
-            _budget_slice(F.array_sort(F.collect_list(item)), cap, token_budget).alias(
-                "items"
-            ),
-            F.count("*").alias("cnt"),
+            F.array_sort(F.flatten(F.collect_list("items"))).alias("items"),
+            F.sum("cnt").alias("n_children"),
         )
-    )
-    return p1.groupBy("tree_id", "dataset_id", "parent_cell").agg(
-        _budget_slice(
-            F.array_sort(F.flatten(F.collect_list("items"))), cap, token_budget
-        ).alias("items"),
-        F.sum("cnt").alias("n_children"),
+        .withColumn("items", packed)
     )
 
 
-def _kind_col():
-    """Per-tree root promotion (reference :363-365 — one build per dataset
-    there; here several datasets can share one pass) over a level's nodes,
-    one row per group: a tree whose level has exactly one group roots there,
-    while other trees keep ascending."""
-    groups = F.count("*").over(Window.partitionBy("tree_id", "dataset_id"))
-    return F.when(groups == 1, F.lit("root")).otherwise(F.lit("summary"))
+def _root_kind(groups: dict):
+    """Root promotion (reference :363-365; one build per dataset there, here
+    several datasets can share one pass) from a level's per-tree group
+    counts: a tree whose level has exactly one group roots there, while
+    other trees keep ascending."""
+    roots = [t for t, n in groups.items() if n == 1]
+    return F.when(F.col("tree_id").isin(roots), F.lit("root")).otherwise(F.lit("summary"))
 
 
 def _ascend_one_level(
@@ -261,8 +262,9 @@ def _ascend_one_level(
     parent_res: int,
     p: TreeParams,
     n_cur: int,
-) -> tuple[DataFrame, DataFrame, DataFrame, int, bool]:
-    """One ladder step: returns (parents, edges, parent_links, n_groups, forced)."""
+) -> tuple[DataFrame, DataFrame, DataFrame, dict, bool]:
+    """One ladder step: returns (parents, edges, parent_links, groups, forced):
+    ``parents`` persisted, all of kind summary, ``groups`` its count per tree."""
     embed = p.resolved_embed_fn()
     summarize = p.resolved_summarize_fn()
     cur = cur.withColumn("parent_cell", cell_parent_col(F.col("cell"), child_res, parent_res))
@@ -323,31 +325,31 @@ def _ascend_one_level(
             .withColumn(
                 "node_id", summary_node_id(F.col("tree_id"), F.col("level"), F.col("cell"))
             )
-            .withColumn("kind", _kind_col())
+            .withColumn("kind", F.lit("summary"))
             .withColumn(
                 "ord", F.concat_ws("#", F.lit(f"L{level}"), F.col("cell").cast("string"))
             )
             .withColumn("v", embed(F.col("text")))
         )
 
-    # Persist-then-count: one parent row per group, so the parents count IS
-    # the stall-guard statistic — the salted agg + embed run ONCE per level
-    # (previously the agg evaluated a second time when parents materialized).
+    # Persist, then collect the per-tree group counts: the salted agg + embed
+    # run once per level, and the counts give the stall-guard total, the
+    # trees that root here and the next level's child count.
     parents = _make_parents(cur).persist()
-    n_groups = parents.count()
+    groups = dict(parents.groupBy("tree_id").count().collect())
 
     # stall guard (reference :109-114): coarsening guarantees progress, but if
     # a level fails to shrink, collapse each tree into one group (grouping
     # keys include tree_id, so the collapse stays per-dataset).
     forced_single = False
-    if n_groups >= n_cur:
+    if sum(groups.values()) >= n_cur:
         forced_single = True
         parents.unpersist()
         # forced collapse uses PRIMARY memberships only: with overlap a
         # child would otherwise enter the single group once per ring cell
         cur = cur_primary.withColumn("parent_cell", F.lit(0).cast("long"))
         parents = _make_parents(cur).persist()
-        n_groups = parents.count()
+        groups = dict(parents.groupBy("tree_id").count().collect())
 
     # edges: every child -> its parent (uncapped: caps affect only summary text;
     # provenance stays complete, mirroring A6/A7 semantics)
@@ -360,11 +362,12 @@ def _ascend_one_level(
 
     # first-seen dedup of chunk provenance (reference utils/chunking.py:4-11;
     # rank assignment build_tree_service.py:342-349): children ordered by ord,
-    # within child by child rank; first occurrence of a chunk wins.
+    # within child by child rank; first occurrence of a chunk wins. One
+    # shuffle on parent_id clusters both windows.
     child_links = edges.join(
         cur_links.select(F.col("node_id").alias("child_id"), "chunk_id", "rank"),
         "child_id",
-    )
+    ).repartition("parent_id")
     w_first = Window.partitionBy("parent_id", "chunk_id").orderBy("child_ord", "rank")
     w_rank = Window.partitionBy("parent_id").orderBy("child_ord", "rank")
     parent_links = (
@@ -383,7 +386,7 @@ def _ascend_one_level(
     edges_out = edges.select("tree_id", "parent_id", "child_id").withColumn(
         "level", F.lit(level)
     )
-    return parents, edges_out, parent_links, n_groups, forced_single
+    return parents, edges_out, parent_links, groups, forced_single
 
 
 def _run_ladder(
@@ -416,18 +419,20 @@ def _run_ladder(
     while level < len(ladder) - 1 and n_cur > 1:
         level += 1
         child_res, parent_res = ladder[level - 1], ladder[level]
-        parents, edges, links, n_groups, forced = _ascend_one_level(
+        parents, edges, links, groups, forced = _ascend_one_level(
             cur, cur_links, level, child_res, parent_res, p, n_cur
         )
-        cur_links = sink(level, parents, edges, links)
+        kinded = parents.withColumn("kind", _root_kind(groups))
+        cur_links = sink(level, kinded, edges, links)
+        n_groups = sum(groups.values())
         stats.append(
             {"level": level, "groups": n_groups, "children": n_cur, "forced_single": forced}
         )
         if release:
             cached.unpersist()
         cached = parents
-        cur = parents.select(*NODE_COLS).filter(F.col("kind") != "root")
-        n_cur = cur.count()
+        cur = kinded.select(*NODE_COLS).filter(F.col("kind") != "root")
+        n_cur = sum(n for n in groups.values() if n > 1)
     if release:
         cached.unpersist()
     return level, stats
@@ -572,7 +577,8 @@ def ingest_incremental(
     The result is IDENTICAL to a full rebuild over the union corpus
     (pytest-pinned): each dirty cell re-aggregates its COMPLETE child set,
     so summaries, token-budget packs, edges, and provenance links come out
-    the same.
+    the same. Level 1's kinds are then re-decided from its per-tree group
+    counts, as the build decides them: a root appears or goes by one merge.
 
     Precondition: level 1 is a genuine coarsening (no stall-forced single
     group), which holds for any real geography; the restricted ascend
@@ -605,35 +611,29 @@ def ingest_incremental(
     ).persist()
     links0 = catalog.read(f"{prefix}_links").filter(F.col("level") == 0)
     n_guard = leaves_dirty.count() + 1  # stall guard disabled (see docstring)
+    # kinds stay summary until step 5 (the restricted set must not self-promote)
     lvl1_dirty, edges, links, _, forced = _ascend_one_level(
         leaves_dirty, links0, 1, ladder[0], ladder[1], p, n_guard
     )
     assert not forced
-    # kind is decided globally below (the restricted set must not self-promote)
-    parents = lvl1_dirty.withColumn("kind", F.lit("summary"))
 
     # 4. replace the dirty level-1 cells and drop every level above
-    _truncate(catalog, prefix, 1, ingest, dirty=parents)
-    _commit_level(catalog, prefix, 1, parents, edges, links, ingest)
+    _truncate(catalog, prefix, 1, ingest, dirty=lvl1_dirty)
+    _commit_level(catalog, prefix, 1, lvl1_dirty, edges, links, ingest)
     leaves_dirty.unpersist()
     lvl1_dirty.unpersist()
 
-    # 5. root promotion over the whole merged level 1: a tree whose level 1
-    # collapsed to one group roots there and leaves the ascent; a stale root
-    # in a tree that now has several groups demotes
-    changed = (
-        catalog.read(t_nodes)
-        .filter(F.col("level") == 1)
-        .withColumn("new_kind", _kind_col())
-        .filter(F.col("kind") != F.col("new_kind"))
-    )
-    if changed.limit(1).count():
-        catalog.merge(
-            t_nodes,
-            changed.withColumn("kind", F.col("new_kind")).drop("new_kind"),
-            ["node_id"],
-            props=ingest,
-        )
+    # 5. root promotion over the whole merged level 1, from its per-tree
+    # counts: a tree whose level 1 is one group roots there and leaves the
+    # ascent; a stale root in a tree that now has several groups demotes
+    lvl1 = catalog.read(t_nodes).filter(F.col("level") == 1)
+    counts = lvl1.groupBy("tree_id").agg(
+        F.count("*").alias("n"), F.max(F.col("kind") == "root").alias("rooted")
+    ).collect()
+    if any((r.n == 1) != r.rooted for r in counts):
+        kind = _root_kind({r.tree_id: r.n for r in counts})
+        changed = lvl1.filter(F.col("kind") != kind).withColumn("kind", kind)
+        catalog.merge(t_nodes, changed, ["node_id"], props=ingest)
 
     # 6. rebuild levels >= 2 from the merged level 1
     return _ascend_in_catalog(catalog, prefix, p, *_frontier(catalog, prefix, 1), 1, ingest)

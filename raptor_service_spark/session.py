@@ -42,6 +42,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce the partitions of persisted plans too. A cached
+        # frame's partitioning is fixed when it is built, and nothing here
+        # relies on it, while a small cached level (a tree level of a few
+        # rows behind a pandas UDF) would otherwise run one task per shuffle
+        # partition.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Keep small dims broadcastable (default 10MB is fine; explicit for clarity).
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))

@@ -384,6 +384,9 @@ def test_salted_collect_two_phase_plan_under_skew(spark):
     assert "salt" in inner and "salt" not in outer
     # collect_list runs partial+final in EACH phase (object hash aggregate)
     assert plan.count("ObjectHashAggregate") == 4
+    # each phase sorts its children once and packs the sorted column: the
+    # sort is never inlined into the packing pass
+    assert grouped._jdf.queryExecution().optimizedPlan().toString().count("array_sort(") == 2
 
     # data bounds: phase-1 spreads the 1800-row hot cell over 16 salt
     # groups (largest group ~112, far below the whole cell)...

@@ -357,6 +357,23 @@ def test_checkpointed_build_and_ingest_release_their_cache(spark, tmp_path):
     assert persisted() == before
 
 
+def test_checkpointed_build_runs_a_fixed_number_of_jobs(spark, tmp_path, count_jobs):
+    """A checkpointed build of 40 docs on ladder (6, 3, 0) runs a pinned
+    number of Spark jobs. Each level runs its packer, one collect of its
+    per-tree group counts, one shuffle for both link-rank windows and its
+    commits: no level count and no root-promotion window (each of those
+    cost jobs at every level)."""
+    spans = _spans_for(spark, 40, seed=80).persist()
+    spans.count()
+    cat = SnapshotCatalog(str(tmp_path / "cat_jobs"), spark)
+    tree, n = count_jobs(
+        lambda: build_tile_tree_checkpointed(spans, PARAMS, catalog=cat, prefix="t", resume=False)
+    )
+    spans.unpersist()
+    assert [s["groups"] for s in tree.stats] == [19, 1]
+    assert n == 26
+
+
 def test_head_cache_misses_after_ingest(spark, tmp_path, monkeypatch):
     """The tree head is cached per TileTree: an ingest returns a new tree
     whose requests see the ingested corpus, the pre-ingest tree keeps

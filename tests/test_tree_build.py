@@ -219,6 +219,82 @@ def test_token_budget_oversized_single_child(spark):
     assert len(got) == 1 and len(got[0].items) == 1  # still packs the child
 
 
+@pytest.mark.parametrize("salts", [1, 16])
+def test_salted_collect_matches_python_twin(spark, salts):
+    """Every group of _salted_capped_collect equals the pure-Python packer
+    twin (__spark_entry__._py_budget_pack): same children with the same
+    token counts in the same order, and the true child count, on the
+    packing's boundaries."""
+    import __spark_entry__ as entry_mod
+    from raptor_service_spark.operators.tree import _salted_capped_collect
+
+    cap, budget = 8, 100
+
+    def words(n):
+        return " ".join(f"w{k}" for k in range(n))
+
+    cells = {
+        0: [words(40), words(60), words(1), words(3)],  # a prefix of exactly the budget
+        1: [words(150), words(2), words(2)],  # the first child alone is over it
+        2: ["", "   ", words(98), "", words(5)],  # blanks count 1 token: 1 + 1 + 98
+        3: [words(3)] * 20,  # more than cap children, all within the budget
+    }
+    rng = np.random.default_rng(9)
+    for cell in range(4, 10):
+        cells[cell] = [words(int(rng.integers(0, 40))) for _ in range(int(rng.integers(1, 60)))]
+    cur = spark.createDataFrame(
+        [
+            ("t1", "ds", cell, f"n{cell}-{i:03d}", text, f"{cell}#{i:09d}")
+            for cell, texts in cells.items()
+            for i, text in enumerate(texts)
+        ],
+        "tree_id string, dataset_id string, parent_cell long, "
+        "node_id string, text string, ord string",
+    )
+    want = {}
+    for cell, texts in cells.items():
+        items = [
+            {"node_id": f"n{cell}-{i:03d}", "tok": max(entry_mod._py_token_count(t), 1)}
+            for i, t in enumerate(texts)
+        ]
+        packed = entry_mod._py_budget_pack(items, cap, budget)
+        want[cell] = ([(it["node_id"], it["tok"]) for it in packed], len(texts))
+    got = {
+        r.parent_cell: ([(it.node_id, it.tok) for it in r.items], r.n_children)
+        for r in _salted_capped_collect(cur, cap, salts, budget).collect()
+    }
+    assert got == want
+    assert [len(got[c][0]) for c in range(4)] == [2, 1, 3, cap]
+
+
+def test_hot_cell_build_is_salt_invariant(spark):
+    """Hostile skew: with at least a fifth of the spans in one leaf cell, the
+    build at salt_buckets 1 and 16 gives identical nodes, edges and links —
+    the salted phase stays associative when one cell dominates."""
+    from dataclasses import replace
+
+    docs = gen_documents_df(spark, 60, seed=12)
+    hot = F.pmod(F.xxhash64("doc_id"), F.lit(10)) < 3
+    docs = docs.withColumn("lat", F.when(hot, 48.85).otherwise(F.col("lat"))).withColumn(
+        "lng", F.when(hot, 2.35).otherwise(F.col("lng"))
+    )
+    spans = embed_spans(explode_spans(docs), dim=32).persist()
+    pts = spans.select("lat", "lng").toPandas()
+    leaf = cell_encode_np(pts.lat.values, pts.lng.values, PARAMS.res_ladder[0])
+    assert np.unique(leaf, return_counts=True)[1].max() >= 0.2 * len(leaf)
+
+    signatures = []
+    for salts in (1, 16):
+        t = build_tile_tree(spans, replace(PARAMS, salt_buckets=salts))
+        signatures.append((
+            sorted(map(tuple, t.nodes.select("node_id", "level", "kind", "cell", "text").collect())),
+            sorted(map(tuple, t.edges.select("parent_id", "child_id", "level").collect())),
+            sorted(map(tuple, t.links.select("node_id", "chunk_id", "rank").collect())),
+        ))
+    assert signatures[0] == signatures[1]
+    assert any(r[1] == 2 for r in signatures[0][0])  # the ladder climbed to the top
+
+
 def test_multi_dataset_build_isolates_trees(spark):
     """Two datasets in ONE build pass (groupBy includes tree_id/dataset_id):
     each gets its own root; edges and links never cross datasets; each
