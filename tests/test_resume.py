@@ -361,8 +361,7 @@ def test_checkpointed_build_runs_a_fixed_number_of_jobs(spark, tmp_path, count_j
     """A checkpointed build of 40 docs on ladder (6, 3, 0) runs a pinned
     number of Spark jobs. Each level runs its packer, one collect of its
     per-tree group counts, one shuffle for both link-rank windows and its
-    commits: no level count and no root-promotion window (each of those
-    cost jobs at every level)."""
+    commits: no level count and no root-promotion window."""
     spans = _spans_for(spark, 40, seed=80).persist()
     spans.count()
     cat = SnapshotCatalog(str(tmp_path / "cat_jobs"), spark)
