@@ -762,8 +762,9 @@ QVEC2_SQL = "[" + ", ".join(f"{x:.6f}" for x in QVEC2) + "]"
 
 def q_knn_multi(spark, sf_dir):
     """J8 multi-query brute-force kNN: ONE data pass for many queries
-    (operators/knn.py brute_force_knn_multi — per-Arrow-batch GEMM local
-    top-k, then a per-qid window merge; shuffle carries batches*k rows)."""
+    (operators/knn.py brute_force_knn_multi — the shared Arrow kernel: one
+    GEMM per batch, a local top-k per query that keeps round(dist, 9) ties
+    with the k-th, then a per-qid window merge)."""
     from raptor_service_spark.operators.knn import brute_force_knn_multi
 
     e = _read(spark, sf_dir, "embeddings").select(

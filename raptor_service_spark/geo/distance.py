@@ -17,9 +17,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 EARTH_RADIUS_KM = 6371.0088
-# conservative degree<->km bounds for candidate-box padding:
+# conservative degree<->km bound for candidate-box padding:
 KM_PER_DEG_LAT_MIN = 110.0  # true meridian value is 110.574-111.694
-KM_PER_DEG_LNG_EQ_MIN = 110.0  # true equator value is 111.320
 
 
 def haversine_np(lat1, lng1, lat2, lng2) -> np.ndarray:

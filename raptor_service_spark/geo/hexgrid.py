@@ -76,15 +76,6 @@ def hex_dist_sql(q1: str, r1: str, q2: str, r2: str) -> str:
     )
 
 
-def hex_center_sql(q: str, r: str, size: float) -> tuple[str, str]:
-    """Planar (x, y) center of hex (q, r) — the encode's inverse, used by
-    the nearest-center property test."""
-    s = _d(repr(float(size)))
-    x = f"({s} * {_d('1.7320508075688772')} * (({q}) + ({r}) / {_d('2.0')}))"
-    y = f"({s} * {_d('1.5')} * ({r}))"
-    return x, y
-
-
 def hex_withcolumns(df, size: float, x_col: str, y_col: str):
     """Append BIGINT columns ``hq``, ``hr`` — the hex bin of (x_col, y_col).
     Fractionals are materialized as intermediate columns so Catalyst sees

@@ -100,21 +100,3 @@ def uncompact_cells_col(cell: F.Column | str, target_res: int) -> F.Column:
             ),
         )
     )
-
-
-def uncompact_cells_sql(cell_expr: str, target_res: int) -> str:
-    """DuckDB twin of uncompact_cells_col (unnest of the generated block)."""
-    from raptor_service_spark.geo.grid import RES_MULTIPLIER
-
-    tn = 2**target_res
-    r = f"CAST(FLOOR({cell_expr} / {RES_MULTIPLIER}) AS BIGINT)"
-    n = f"CAST(power(2.0, {r}) AS BIGINT)"
-    shift = f"CAST(power(2.0, {target_res} - {r}) AS BIGINT)"
-    rem = f"({cell_expr} - {r} * {RES_MULTIPLIER})"
-    y = f"CAST(FLOOR({rem} / {n}) AS BIGINT)"
-    x = f"({rem} - {y} * {n})"
-    return (
-        f"(SELECT {target_res * RES_MULTIPLIER} + yy * {tn} + xx "
-        f" FROM generate_series({y} * {shift}, ({y} + 1) * {shift} - 1) g1(yy),"
-        f"      generate_series({x} * {shift}, ({x} + 1) * {shift} - 1) g2(xx))"
-    )

@@ -9,12 +9,13 @@ pruning when the table is written partitioned by cell) and runs exact cosine
 only inside the candidate set, falling back to wider rings until enough
 candidates exist.
 
-Physical shape of brute force: per-Arrow-batch LOCAL top-k in a mapInPandas
-kernel (BLAS matvec), then a global merge of ``numPartitions * k`` rows via
-TakeOrderedAndProject — the classic distributed top-k: no full sort, no full
-shuffle, driver sees only the merged k. ``brute_force_knn_np`` is its twin for
-a matrix already in driver memory (the tile-tree head), ranking id for id
-like the Spark kernel.
+Single query: ``brute_force_knn`` scores in the JVM (codegen) and keeps k
+rows with TakeOrderedAndProject; ``grid_knn`` first prunes to the planned
+ring. ``brute_force_knn_np`` is its twin for a matrix already in driver
+memory (the tile-tree head). Many queries: ``brute_force_knn_multi`` and
+``grid_knn_multi`` share one Arrow kernel (``_multi_knn``) — one GEMM per
+batch, a tie-safe local top-k per query, then a per-qid window, so the
+shuffle carries only each batch's candidates.
 """
 
 from __future__ import annotations
@@ -89,11 +90,56 @@ def _cell_counts(df_with_cell: DataFrame) -> dict[int, int]:
     }
 
 
-def _top_k_per_qid(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+def _top_k_per_qid(scored: DataFrame, k: int) -> DataFrame:
     """Global top-k per ``qid`` over locally pre-cut candidates, ordered by
     (round(dist, 9), id) like brute_force_knn."""
-    w = Window.partitionBy("qid").orderBy(F.round(F.col("dist"), 9).asc(), F.col(id_col).asc())
+    w = Window.partitionBy("qid").orderBy(F.round(F.col("dist"), 9).asc(), F.col("id").asc())
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+def _multi_knn(
+    rows: DataFrame,
+    qmat: np.ndarray,
+    qids: list[str],
+    k: int,
+    cells: list[list[int] | None] | None = None,
+    vec_dtype: str | None = None,
+) -> DataFrame:
+    """Top-k per qid of ``rows`` (``id``, ``v``, and ``ann_cell`` with
+    ``cells``) in one ``mapInPandas`` pass. Each batch's vectors (list<float>,
+    or with ``vec_dtype`` the index's packed binary) meet every query in one
+    GEMM; query ``i`` counts only rows whose ``ann_cell`` is in ``cells[i]``
+    (all rows when that is None). A batch keeps every row within 1e-9 of its
+    k-th distance, so no tie under (round(dist, 9), id) is cut before the
+    merge window."""
+    qn = _unit_rows(qmat)
+    cells = cells or [None] * len(qmat)
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            if vec_dtype is None:
+                mat = np.array(pdf["v"].tolist(), dtype=np.float64)
+            else:
+                mat = np.frombuffer(b"".join(pdf["v"]), dtype=vec_dtype).reshape(len(pdf), -1)
+            dist = 1.0 - _unit_rows(mat.astype(np.float64)) @ qn.T  # (batch, nq)
+            ids = pdf["id"].to_numpy()
+            out = []
+            for i, qid in enumerate(qids):
+                d = dist[:, i]
+                sel = np.arange(len(d))
+                if cells[i] is not None:
+                    sel = np.flatnonzero(np.isin(pdf["ann_cell"].to_numpy(), cells[i]))
+                if len(sel) > k:
+                    kth = np.partition(d[sel], k - 1)[k - 1]
+                    sel = sel[d[sel] <= kth + 1e-9]
+                out.append(pd.DataFrame({"qid": qid, "id": ids[sel], "dist": d[sel]}))
+            yield pd.concat(out, ignore_index=True)
+
+    id_type = rows.schema["id"].dataType.simpleString()
+    scored = rows.mapInPandas(score, schema=f"qid string, id {id_type}, dist double")
+    return _top_k_per_qid(scored, k)
 
 
 def _query_cell(q: np.ndarray, res: int) -> int:
@@ -222,49 +268,11 @@ def brute_force_knn_np(mat: np.ndarray, ids: np.ndarray, q: np.ndarray, k: int) 
     return np.array(sorted(range(len(keys)), key=keys.__getitem__)[:k], dtype=np.int64)
 
 
-def brute_force_knn_multi(
-    df: DataFrame,
-    queries: np.ndarray,
-    qids: list[str],
-    k: int,
-    vec_col: str = "v",
-    payload_cols: tuple[str, ...] = (),
-    id_col: str = "id",
-) -> DataFrame:
-    """Exact top-k for MANY queries in one pass over the data.
-
-    mapInPandas computes per-batch local top-k per query against the
-    broadcast query matrix (one BLAS GEMM per Arrow batch), then a window
-    keeps the global k — shuffle carries only ~(batches * k * n_queries) rows.
-    """
-    qmat = check_query(queries)
-    qnorm = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qmat_n = qmat / qnorm
-    qid_arr = list(qids)
-    cols = [id_col, *payload_cols]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            sim = _unit_rows(mat) @ qmat_n.T  # (batch, nq)
-            dist = 1.0 - sim
-            kk = min(k, len(pdf))
-            out_frames = []
-            for qi, qid in enumerate(qid_arr):
-                idx = np.argpartition(dist[:, qi], kk - 1)[:kk]
-                sub = pdf.iloc[idx][cols].copy()
-                sub["qid"] = qid
-                sub["dist"] = dist[idx, qi]
-                out_frames.append(sub)
-            yield pd.concat(out_frames, ignore_index=True)
-
-    fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.select(*cols).schema.fields
-    )
-    local = df.mapInPandas(gen, schema=f"{fields}, qid string, dist double")
-    return _top_k_per_qid(local, k, id_col)
+def brute_force_knn_multi(df: DataFrame, queries: np.ndarray, qids: list[str], k: int) -> DataFrame:
+    """Exact top-k for MANY queries in one pass over ``df`` (``id``, ``v``
+    list<float>): every row is scored against every query in the shared
+    Arrow kernel (``_multi_knn``). Output: (qid, id, dist), top-k per qid."""
+    return _multi_knn(df.select("id", "v"), check_query(queries), qids, k)
 
 
 def grid_knn(
@@ -463,69 +471,27 @@ def grid_knn_multi(
     cell_counts: dict[int, int] | None = None,
     vec_dtype: str = "<f4",
 ) -> DataFrame:
-    """Grid-compacted kNN for MANY queries in two jobs total.
+    """Grid-compacted kNN for MANY queries in one pass over the index.
 
-    Job 1 (skippable by passing precomputed ``cell_counts``): occupancy
-    histogram ``groupBy(ann_cell).count()`` — the planner statistic.
-    Job 2: one pass over the union of all queries' candidate cells. The scan
-    is pruned twice before any vector is decoded: ``pfx IN (...)`` hits the
-    index table's directory partitions (partition pruning), and
-    ``ann_cell IN (...)`` skips row groups inside them (files are sorted by
-    ann_cell). Surviving rows get their probing query ids via a broadcast
-    (cell, qid) join, then exact cosine (one frombuffer + GEMV per Arrow
-    batch) and a per-qid top-k window; the shuffle carries only candidates.
+    The ring planner picks each query's cells on the driver from the
+    occupancy histogram (one job, skipped by passing ``cell_counts``). When
+    every query has planned cells, the scan is pruned before any vector is
+    decoded: ``pfx IN (...)`` prunes directory partitions and ``ann_cell IN
+    (...)`` skips row groups (files are sorted by ann_cell); an unplanned
+    query (sparse table) scans the whole index. ``_multi_knn`` then scores
+    each query on its own cells only: with ``cell_counts`` a request runs two
+    jobs, the scan-and-score stage and the per-qid merge.
 
-    Replaces per-query ring probing (grid_knn) whose count-jobs dominate at
-    high query counts. Output: (qid, id, dist), top-k per qid. ``index``
-    must carry (id, v binary-f32, ann_cell, pfx) — see build_ann_index.
+    Output: (qid, id, dist), top-k per qid. ``index`` must carry (id, v
+    binary, ann_cell, pfx) — see build_ann_index.
     """
     qmat = check_query(queries)
     if cell_counts is None:
         cell_counts = _cell_counts(index)
-
-    spark = index.sparkSession
-    pairs: list[tuple[int, str]] = []
-    full_scan_qids: list[str] = []
-    for q, qid in zip(qmat, qids):
-        cells = plan_candidate_cells(cell_counts, q, k, res)
-        if cells is None:
-            full_scan_qids.append(qid)
-        else:
-            pairs.extend((c, qid) for c in cells)
-
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    qmap = {qid: qnorm[i] for i, qid in enumerate(qids)}
-    qmap_b = spark.sparkContext.broadcast(qmap)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.reset_index(drop=True)
-            mat = np.frombuffer(b"".join(pdf["v"]), dtype=vec_dtype).reshape(len(pdf), -1)
-            mat = _unit_rows(mat.astype(np.float64))
-            out = []
-            for qid, grp in pdf.groupby("qid", sort=False):
-                sim = mat[grp.index.to_numpy()] @ qmap_b.value[qid]
-                out.append(pd.DataFrame({"qid": qid, "id": grp["id"].to_numpy(), "dist": 1.0 - sim}))
-            yield pd.concat(out, ignore_index=True)
-
-    parts = []
-    if pairs:
-        all_cells = sorted({c for c, _ in pairs})
-        prefixes = sorted({int(p) for p in cell_parent_np(np.array(all_cells), ANN_PFX_RES)})
-        cells_df = spark.createDataFrame(pairs, "ann_cell long, qid string")
-        cand = (
-            index.filter(F.col("pfx").isin(prefixes) & F.col("ann_cell").isin(all_cells))
-            .join(F.broadcast(cells_df), "ann_cell")
-            .select("qid", "id", "v")
-        )
-        parts.append(cand)
-    if full_scan_qids:
-        qdf = spark.createDataFrame([(q,) for q in full_scan_qids], "qid string")
-        parts.append(index.crossJoin(F.broadcast(qdf)).select("qid", "id", "v"))
-    if not parts:
-        return spark.createDataFrame([], "qid string, id string, dist double")
-    allc = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    scored = allc.mapInPandas(score, schema="qid string, id string, dist double")
-    return _top_k_per_qid(scored, k, "id")
+    cells = [plan_candidate_cells(cell_counts, q, k, res) for q in qmat]
+    rows = index
+    if all(c is not None for c in cells):
+        union = sorted({c for cs in cells for c in cs})
+        prefixes = sorted({int(p) for p in cell_parent_np(np.array(union), ANN_PFX_RES)})
+        rows = index.filter(F.col("pfx").isin(prefixes) & F.col("ann_cell").isin(union))
+    return _multi_knn(rows.select("id", "v", "ann_cell"), qmat, qids, k, cells, vec_dtype)

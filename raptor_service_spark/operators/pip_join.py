@@ -37,6 +37,26 @@ def polygon_cells_df(spark, polygons: dict[str, np.ndarray], res: int) -> DataFr
     return spark.createDataFrame(rows, "qid string, cell long, is_boundary boolean")
 
 
+def _pip_exact_udf(spark, polygons: dict[str, np.ndarray]):
+    """Pandas UDF ``(qid, lat, lng) -> inside``: exact ray casting of each
+    point against its polygon, the polygons broadcast once."""
+    polys_b = spark.sparkContext.broadcast(
+        {qid: np.asarray(p, dtype=np.float64) for qid, p in polygons.items()}
+    )
+
+    @F.pandas_udf(BooleanType())
+    def pip_exact(qid: pd.Series, lat: pd.Series, lng: pd.Series) -> pd.Series:
+        out = np.zeros(len(qid), dtype=bool)
+        latv = lat.to_numpy(dtype=np.float64)
+        lngv = lng.to_numpy(dtype=np.float64)
+        for q in qid.unique():
+            mask = (qid == q).to_numpy()
+            out[mask] = points_in_polygon_np(latv[mask], lngv[mask], polys_b.value[q])
+        return pd.Series(out)
+
+    return pip_exact
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polygons: dict[str, np.ndarray],
@@ -52,20 +72,7 @@ def point_in_polygon_join(
     """
     spark = points.sparkSession
     cells_df = polygon_cells_df(spark, polygons, res)
-    polys_b = spark.sparkContext.broadcast(
-        {qid: np.asarray(p, dtype=np.float64) for qid, p in polygons.items()}
-    )
-
-    @F.pandas_udf(BooleanType())
-    def pip_exact(qid: pd.Series, lat: pd.Series, lng: pd.Series) -> pd.Series:
-        out = np.zeros(len(qid), dtype=bool)
-        latv = lat.to_numpy(dtype=np.float64)
-        lngv = lng.to_numpy(dtype=np.float64)
-        for q in qid.unique():
-            mask = (qid == q).to_numpy()
-            out[mask] = points_in_polygon_np(latv[mask], lngv[mask], polys_b.value[q])
-        return pd.Series(out)
-
+    pip_exact = _pip_exact_udf(spark, polygons)
     pts = points.withColumn("_cell", cell_encode_col(F.col(lat_col), F.col(lng_col), res))
     joined = pts.join(F.broadcast(cells_df), pts["_cell"] == cells_df["cell"], "inner")
     accepted = joined.filter(
@@ -84,21 +91,8 @@ def point_in_polygon_join_bruteforce(
     """Reference implementation for tests: exact PIP against EVERY polygon
     (cross join, no pruning). Same output contract as point_in_polygon_join."""
     spark = points.sparkSession
-    polys_b = spark.sparkContext.broadcast(
-        {qid: np.asarray(p, dtype=np.float64) for qid, p in polygons.items()}
-    )
+    pip_exact = _pip_exact_udf(spark, polygons)
     qids = spark.createDataFrame([(q,) for q in polygons], "qid string")
-
-    @F.pandas_udf(BooleanType())
-    def pip_exact(qid: pd.Series, lat: pd.Series, lng: pd.Series) -> pd.Series:
-        out = np.zeros(len(qid), dtype=bool)
-        latv = lat.to_numpy(dtype=np.float64)
-        lngv = lng.to_numpy(dtype=np.float64)
-        for q in qid.unique():
-            mask = (qid == q).to_numpy()
-            out[mask] = points_in_polygon_np(latv[mask], lngv[mask], polys_b.value[q])
-        return pd.Series(out)
-
     return points.crossJoin(F.broadcast(qids)).filter(
         pip_exact(F.col("qid"), F.col(lat_col), F.col(lng_col))
     )

@@ -19,7 +19,8 @@ MEASURED (timed, the engine's work):
      Arrow pass (build_ann_index) -> written sorted by ann_cell so query
      predicates prune at the row-group level (partition level on Iceberg).
   4. grid-compacted kNN: occupancy-histogram planner (one tiny job) + ONE
-     candidate pass for all query vectors (grid_knn_multi).
+     pruned candidate pass for all query vectors, scored per query on its
+     own cells in one Arrow kernel, then a per-qid merge (grid_knn_multi).
 
 Scale posture: stages are narrow scans, broadcast joins, or an O(candidates)
 shuffle; no stage shuffles the full span table. The same DAG runs unchanged

@@ -1,20 +1,14 @@
-"""Explicit StructTypes for every engine table (SURVEY.md §1).
+"""Explicit StructTypes for the tile-tree tables (SURVEY.md §1), the
+embedding dim and the span kinds.
 
-Mirrors the reference's SQLAlchemy models (fixed schema; typed columns instead
-of JSONB escape hatches):
-  * documents/spans — BASELINE.json input_hint authoritative shape; reference
-    analog: chunks with unique (doc_id, idx) (/root/reference/db/models/documents.py:30-45)
-  * embeddings      — /root/reference/db/models/embeddings.py:21-35 (vector(1024)
-    -> array<float>)
-  * tiles/edges/links — /root/reference/db/models/raptor.py:37-81
+The tile tables mirror the reference's SQLAlchemy tile/edge/link models
+(db/models/raptor.py:37-81) with a fixed schema: typed columns instead of
+JSONB escape hatches.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     MapType,
@@ -24,52 +18,6 @@ from pyspark.sql.types import (
 )
 
 N_DIM = 64  # test dim; reference default is 1024 (/root/reference/db/models/base.py:13)
-
-SPAN = StructType(
-    [
-        StructField("kind", StringType(), False),
-        StructField("text", StringType(), False),
-        StructField("media_ref", StringType(), False),
-        StructField("offset", IntegerType(), False),
-    ]
-)
-
-DOCUMENTS = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("dataset_id", StringType(), False),
-        StructField("spans", ArrayType(SPAN, containsNull=False), False),
-        StructField("lat", DoubleType(), False),
-        StructField("lng", DoubleType(), False),
-    ]
-)
-
-SPANS_FLAT = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("dataset_id", StringType(), False),
-        StructField("idx", IntegerType(), False),
-        StructField("kind", StringType(), False),
-        StructField("text", StringType(), False),
-        StructField("media_ref", StringType(), False),
-        StructField("token_cnt", IntegerType(), True),
-        StructField("chunk_id", StringType(), False),
-        StructField("lat", DoubleType(), False),
-        StructField("lng", DoubleType(), False),
-    ]
-)
-
-EMBEDDINGS = StructType(
-    [
-        StructField("id", StringType(), False),
-        StructField("dataset_id", StringType(), False),
-        StructField("owner_type", StringType(), False),  # 'chunk' | 'tree_node'
-        StructField("owner_id", StringType(), False),
-        StructField("model", StringType(), False),
-        StructField("dim", IntegerType(), False),
-        StructField("v", ArrayType(FloatType(), containsNull=False), False),
-    ]
-)
 
 TILE_NODES = StructType(
     [
@@ -103,4 +51,3 @@ NODE_CHUNKS = StructType(
 
 SPAN_KINDS_TEXT = ("text", "header", "code", "list", "quote")
 SPAN_KINDS_MEDIA = ("table", "image")
-SPAN_KINDS = SPAN_KINDS_TEXT + SPAN_KINDS_MEDIA

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from raptor_service_spark.datagen import gen_query_vectors
+from raptor_service_spark.functions.vector import hash_embed_np
 from raptor_service_spark.operators.knn import (
     brute_force_knn,
     brute_force_knn_multi,
@@ -153,3 +154,30 @@ def test_brute_force_np_matches_spark(emb, emb_pd):
     for q in gen_query_vectors(seed=26, n=3, dim=dim):
         got = ids[brute_force_knn_np(mat, ids, q, 25)].tolist()
         assert got == [r.id for r in brute_force_knn(emb, q, 25).collect()]
+
+
+def test_multi_kernels_keep_round9_ties(spark):
+    """Rows ``b`` and ``a`` hold the same vector and tie for the nearest
+    neighbour. Both multi-query kernels rank by (round(dist, 9), id), so with
+    k=1 the answer is ``a``; a per-batch cut to exactly k rows that keeps
+    ``b`` (first in the batch) loses it before the merge."""
+    dim = 16
+    texts = ["tie", "tie", "far away", "other words"]
+    mat = hash_embed_np(texts, dim)
+    rows = [("b", "tie"), ("a", "tie"), ("c", "far away"), ("d", "other words")]
+    q = mat[0]
+
+    vecs = spark.createDataFrame(
+        [(i, v.tolist()) for (i, _), v in zip(rows, mat)], "id string, v array<float>"
+    ).coalesce(1)
+    got = brute_force_knn_multi(vecs, q[None, :], ["q"], 1).collect()
+    assert [r.id for r in got] == ["a"]
+
+    index = build_ann_index(
+        spark.createDataFrame(rows, "id string, text string").coalesce(1), dim=dim
+    ).persist()
+    cells = {r.ann_cell for r in index.select("ann_cell").distinct().collect()}
+    for counts in ({}, {c: 10**6 for c in cells}):  # full scan, then planned cells
+        got = grid_knn_multi(index, q[None, :], ["q"], 1, cell_counts=counts).collect()
+        assert [r.id for r in got] == ["a"]
+    index.unpersist()

@@ -777,3 +777,43 @@ def test_in_memory_build_caches_its_levels(spark, count_jobs, overlap_kring):
         assert jobs(traversal_retrieve, q) <= 4
     chunks.unpersist()
     spans.unpersist()
+
+
+def test_warmed_grid_knn_request_runs_two_jobs_and_no_join(spark, tmp_path, count_jobs):
+    """A warmed single-query ``grid_knn_multi`` with ``cell_counts`` (the
+    serving shape) runs at most 2 Spark jobs — the pruned scan scored in one
+    Arrow kernel, then the per-qid merge — and its plan has no join: the
+    query's cells travel with the kernel, not through a (cell, qid) join."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from raptor_service_spark.datagen import gen_query_vectors
+    from raptor_service_spark.operators.knn import (
+        build_ann_index,
+        grid_knn_multi,
+        plan_candidate_cells,
+        write_ann_index,
+    )
+
+    dim, res, k = 16, 4, 3
+    texts = spark.range(600).select(
+        F.col("id").cast("string").alias("id"),
+        F.concat(F.lit("span "), F.col("id").cast("string")).alias("text"),
+    )
+    write_ann_index(build_ann_index(texts, dim=dim, res=res), str(tmp_path / "index"))
+    index = spark.read.parquet(str(tmp_path / "index"))
+    counts = {
+        r["ann_cell"]: r["n"]
+        for r in index.groupBy("ann_cell").agg(F.count("*").alias("n")).collect()
+    }
+    warm, q = gen_query_vectors(seed=41, n=2, dim=dim)
+    assert plan_candidate_cells(counts, q, k, res) is not None  # the pruned path
+
+    def request(v):
+        return grid_knn_multi(index, np.asarray(v)[None, :], ["q"], k, res=res, cell_counts=counts)
+
+    request(warm).collect()
+    rows, n = count_jobs(lambda: request(q).collect())
+    assert len(rows) == k
+    assert n <= 2
+    assert "Join" not in request(q)._jdf.queryExecution().optimizedPlan().toString()
